@@ -18,75 +18,10 @@ object Explain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    names.foreach {
-      case "clf-core" => explainClfCore(spark, sfDir)
-      case n =>
-        println(s"\n========== $n ==========")
-        SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+    names.foreach { n =>
+      println(s"\n========== $n ==========")
+      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
     }
     spark.stop()
-  }
-
-  /** `clf-core` mode (r12, verdict item 7): the r11 dense-row scoring
-    * optimization lives UPSTREAM of the localCheckpoint every clf
-    * carrier pins its scored table behind, so the carriers' own
-    * formatted plans cannot show it (before/after dumps read as
-    * identical checkpoint scans). This dumps the scoring core itself,
-    * pre-checkpoint: (a) the CURRENT shape — dense (doc_id, y, xs[68])
-    * rows, 1-row broadcast crossJoin, row-local integer fold; (b) the
-    * FORMER r10 sparse shape, reconstructed verbatim from
-    * `git show 57edb38^` — sparse (doc_id, y, bucket, x) rows, a
-    * bucket-keyed broadcast join, and the `hashpartitioning(doc_id,
-    * y)` re-aggregation Exchange the r11 change removed. Both score
-    * the same registry weights over the same corpus, so the plan diff
-    * IS the optimization. */
-  private def explainClfCore(spark: SparkSession, sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.queries.TrainingData
-    import graft.core.Tables
-    import graft.text.TextFunctions.{wsTokens, tokenCount, punctRatio,
-      stopwordRatio, qualityScore}
-    val docs = Tables.documents(spark, sfDir)
-    val wdf = spark.read.parquet(TrainingData.ensureClfWeights(spark, sfDir))
-    println("\n========== clf scoring core — CURRENT (dense rows, " +
-      "pre-checkpoint) ==========")
-    TrainingData.clfScores(TrainingData.clfFeatures(docs), wdf)
-      .explain("formatted")
-    // ---- former r10 sparse shape, reconstructed (57edb38^) ----
-    // the engine's pinned stopword fixture (TrainingData.stopwords)
-    val stopwords = Seq("the", "a", "of", "and")
-    val d2 = docs.select(col("doc_id"), col("text"))
-    val cnts = d2
-      .select(col("doc_id"), explode(wsTokens(lower(col("text")))).as("w"))
-      .filter(col("w") =!= "")
-      .groupBy(col("doc_id"),
-        pmod(graft.dedup.NearDup.md5Hash32(col("w")), lit(64L)).as("bucket"))
-      .agg(count(lit(1)).as("cnt"))
-    val ntok = cnts.groupBy(col("doc_id")).agg(sum(col("cnt")).as("n_tok"))
-    val bow = cnts.join(ntok, Seq("doc_id"))
-      .select(col("doc_id"), col("bucket"),
-        (col("cnt").cast("double") / col("n_tok").cast("double")).as("x"))
-    val lenScore = least(tokenCount(col("text")).cast("double") / 50.0, lit(1.0))
-    val punctOk = lit(1.0) - least(punctRatio(col("text")) * 5.0, lit(1.0))
-    val stopOk = least(stopwordRatio(col("text"), stopwords) * 10.0, lit(1.0))
-    val lab = d2.select(col("doc_id"),
-      (qualityScore(col("text"), stopwords) >= 0.5).cast("long").as("y"),
-      array(lenScore, punctOk, stopOk, lit(1.0)).as("fs"))
-    val side = lab.join(ntok.select(col("doc_id")), Seq("doc_id"))
-      .select(col("doc_id"), posexplode(col("fs")).as(Seq("i", "x")))
-      .select(col("doc_id"), (col("i") + 64).cast("long").as("bucket"), col("x"))
-    val tfSparse = bow.unionByName(side)
-      .join(lab.select(col("doc_id"), col("y")), Seq("doc_id"))
-      .select(col("doc_id"), col("y"), col("bucket"), col("x"))
-    val scoresSparse = tfSparse.join(broadcast(wdf), Seq("bucket"))
-      .groupBy(col("doc_id"), col("y"))
-      .agg(sum(round(col("wb") * col("x") * 1e9, 0).cast("long")).as("zq"))
-      .select(col("doc_id"), col("y"),
-        round((lit(1.0) / (lit(1.0)
-          + exp(-(col("zq").cast("double") / 1e9)))) * 1e6, 0)
-          .cast("long").as("pq"))
-    println("\n========== clf scoring core — FORMER r10 sparse shape " +
-      "(reconstructed from 57edb38^) ==========")
-    scoresSparse.explain("formatted")
   }
 }

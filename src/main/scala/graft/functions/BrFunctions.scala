@@ -85,10 +85,6 @@ object BrFunctions {
     nullif(array_position(array(monthsPt.map(lit): _*), normalizeText(name)), lit(0L))
       .cast("int")
 
-  /** Sort key for month-name ordering (`FIELD(mes, 'JANEIRO', …)`),
-    * Ref: `PROD_Produtividade_FPY.sql:43`. */
-  def monthOrderPt(name: Column): Column = monthNumberPt(name)
-
   /** pt-BR weekday names indexed by MySQL DAYOFWEEK (1=Domingo…7=Sábado),
     * locale-independent literal ladder.
     * Ref: `Códigos Úteis SQL/Cálculo Vendido por Semana.sql:3-12`. */

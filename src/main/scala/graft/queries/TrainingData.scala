@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Store, Tables}
 import graft.functions.VectorExpressions.cosineSim
 import graft.text.TextFunctions._
 
@@ -494,61 +494,22 @@ object TrainingData {
 
   val x13AnnIvf: Q = (s, d) => ivfTopK(s, d, lloydIters = 2)
 
-  /** X31: the persisted-IVF QUERY path — the production side of the
-    * build-once/query-many split that the fused x13 (train + probe,
-    * timed together every run) can't show. The first call per sf-dir
-    * builds and [[graft.ml.IvfIndex.save]]s the on-disk inverted file
-    * (cells partitioned by `cell`); every later call — including every
-    * timed bench pass, since the warm pass pays the build — only loads
-    * it and probes, opening none but the probed cells' files via
-    * dynamic partition pruning (plan-asserted in MlSpec). Same
-    * determinism contract as x13 (shared [[ivfOracle]]); queries are
-    * vec_id 5..9 so the two entries' results stay distinguishable. */
-  /** Build-and-save the x13-shaped IVF index once per sf-dir (first
-    * caller pays; everyone after — x31's probes, x35's cells — reads
-    * the materialized inverted file from disk). Returns the path. */
-  /** name:size:mtime fingerprint of a fixture table's data files —
-    * embedded in materialization cache paths so a changed fixture
-    * abandons the stale artifact and rebuilds instead of silently
-    * reusing it (which would surface only as a confusing oracle
-    * mismatch). */
-  private def fixtureFp(d: String, table: String): String = {
-    import scala.jdk.CollectionConverters._
-    val src = java.nio.file.Paths.get(d, s"$table.parquet")
-    val files =
-      if (java.nio.file.Files.isDirectory(src)) {
-        val st = java.nio.file.Files.walk(src)
-        try st.iterator().asScala.filter(
-          java.nio.file.Files.isRegularFile(_)).toVector
-        finally st.close()
-      } else Vector(src)
-    val sig = files.map(p => s"${p.getFileName}:" +
-        s"${java.nio.file.Files.size(p)}:" +
-        s"${java.nio.file.Files.getLastModifiedTime(p).toMillis}")
-      .sorted.mkString("|")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(sig.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-  }
+  /** Every persisted store a first caller would otherwise build inside
+    * a timed query. [[graft.Bench]] calls this from its UNTIMED warmup
+    * so no timed pass conflates build cost with query cost (round-7
+    * verdict item 1: the official artifact stamped x60 at 10.98 s vs a
+    * 0.90 s receipt). A store already built costs one stat call. */
+  private val stores: Seq[(SparkSession, String) => String] = Seq(
+    ensureIvfIndex, ensureSigStore, ensureCuratedStaged,
+    ensureDHashStore, ensureDedupLabels, ensureIvfPqStore,
+    ensureIvfBaseStore, ensureIvfPqBase,
+    ensurePlantedFixtures,
+    ensureOpqPqStore, ensureClfWeights,
+    ensureWinnowStore, ensureClfTemp,
+    ensureClfTrajectory)
 
-  /** Build every persisted cache a first caller would otherwise pay
-    * inside a timed query — the IVF index (x13/x31/x35b/x75), the
-    * MinHash signature store (x60), and the curated staging table
-    * (x32b). [[graft.Bench]] calls this from its UNTIMED warmup so no
-    * timed pass can conflate build cost with query cost (round-7
-    * verdict item 1: the official artifact stamped x60 at 10.98 s vs
-    * a 0.90 s receipt). Idempotent — each ensure* re-checks its
-    * _SUCCESS marker, so a pre-built cache costs one stat call. */
-  def prebuildCaches(s: SparkSession, d: String): Unit = {
-    ensureIvfIndex(s, d); ensureSigStore(s, d); ensureCuratedStaged(s, d)
-    ensureDHashStore(s, d); ensureDedupLabels(s, d); ensureIvfPqStore(s, d)
-    ensureIvfBaseStore(s, d); ensureIvfPqBase(s, d)
-    ensurePlantedFixtures(s, d)
-    ensureOpqPqStore(s, d); ensureClfWeights(s, d)
-    ensureWinnowStore(s, d); ensureClfTemp(s, d)
-    ensureClfTrajectory(s, d)
-    ()
-  }
+  def prebuildCaches(s: SparkSession, d: String): Unit =
+    stores.foreach(_(s, d))
 
   /** The ingest-staged winnowed-fingerprint table over the raw corpus
     * — the x32b/x98 staged contract for the winnowing family:
@@ -557,24 +518,18 @@ object TrainingData {
     * compute path) and every downstream analytic reads the stored
     * (doc_id, fps) rows. First caller pays;
     * [[prebuildCaches]] pays it in Bench's untimed warmup. */
-  private def ensureWinnowStore(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9.]", "_")
-    // "winnow2": schema v2 — the store also carries each doc's k-gram
-    // count and selected-position count (ingest-time stats, computed
-    // for free during fingerprinting), so x126's corpus-wide audit
-    // reads the staged table instead of re-scanning text (round-9
-    // verdict item 3). New prefix forces a one-time rebuild over any
-    // v1 cache on disk.
-    val path = s"target/winnow2_${tag}_${fixtureFp(d, "documents")}"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$path/_SUCCESS")))
+  private def ensureWinnowStore(s: SparkSession, d: String): String =
+    // the store also carries each doc's k-gram count and selected-
+    // position count (ingest-time stats, computed for free during
+    // fingerprinting), so x126's corpus-wide audit reads the staged
+    // table instead of re-scanning text (round-9 verdict item 3)
+    Store.materialize("winnow2", "v1", d, "documents") { path =>
       graft.dedup.NearDup.winnowedFingerprints(
           spread(s, Tables.documents(s, d).select(col("doc_id"), col("text"))))
         .select(col("doc_id"), col("m"),
           size(col("sel")).cast("long").as("n_sel"), col("fps"))
         .write.mode("overwrite").parquet(path)
-    path
-  }
+    }
 
   /** The persisted model registry for x108's trained quality
     * classifier: 68 (bucket, weight) rows, trained once per fixture
@@ -584,11 +539,8 @@ object TrainingData {
     * retrain a filter model per query; they score against the
     * registry copy. First caller pays the 20 GD jobs;
     * [[prebuildCaches]] pays it in Bench's untimed warmup. */
-  private[graft] def ensureClfWeights(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/clfw_${tag}_${fixtureFp(d, "documents")}"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$path/_SUCCESS"))) {
+  private[graft] def ensureClfWeights(s: SparkSession, d: String): String =
+    Store.materialize("clfw", "v1", d, "documents") { path =>
       val (tf, n) = qualityClfTf(s, d)
       val w = trainQualityClf(tf, n)
       s.createDataFrame(
@@ -596,8 +548,6 @@ object TrainingData {
         .toDF("bucket", "wb")
         .coalesce(1).write.mode("overwrite").parquet(path)
     }
-    path
-  }
 
   /** σ(z/T) quantized 1e-6 after evaluation, for a 1e9-quantized
     * logit `zq` and a 1e-2-quantized temperature `tq` (T = tq/100) —
@@ -615,21 +565,6 @@ object TrainingData {
     pmod(conv(substring(md5(id.cast("string")), 1, 4), 16, 10)
       .cast("long"), lit(100L))
 
-  /** The persisted temperature for x108's classifier (x136): the
-    * 1-parameter post-hoc calibration (Guo et al. 2017) fitted on
-    * x36's VAL split by a quantized NLL grid scan — T ∈ {0.25 …
-    * 4.00} step 0.05, each candidate scored by the 1e-6-quantized
-    * negative log-likelihood of the 1e-6-quantized σ(z/T) (both
-    * transcendentals quantized after evaluation, so the scan is an
-    * integer argmin both engines replay bit-for-bit; ties take the
-    * smaller T). T = 1 sits on the grid, so the fitted NLL can never
-    * exceed the uncalibrated one — the acceptance floor EngineSpec
-    * pins. Stored beside the weight registry ([[ensureClfWeights]])
-    * because serving needs BOTH numbers: production scores with
-    * σ(z/T*), never refits per query. Scale: one val-split scoring
-    * scan × a 76-row broadcast grid collapsing onto 76 rows — the
-    * x111 bounded-grid shape. First caller pays; [[prebuildCaches]]
-    * pays it in Bench's untimed warmup. */
   /** The full (tq, snll) temperature grid on x36's val split — the
     * scan [[ensureClfTemp]] argmins over, exposed whole so EngineSpec
     * can pin the floor (T = 1 is on the grid) without re-deriving
@@ -650,63 +585,51 @@ object TrainingData {
       .groupBy(col("tq")).agg(sum(col("nq")).as("snll"))
   }
 
-  private[graft] def ensureClfTemp(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/clft_${tag}_${fixtureFp(d, "documents")}"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$path/_SUCCESS")))
+  /** The persisted temperature for x108's classifier (x136): the
+    * 1-parameter post-hoc calibration (Guo et al. 2017) fitted on
+    * x36's VAL split by a quantized NLL grid scan — T ∈ {0.25 …
+    * 4.00} step 0.05, each candidate scored by the 1e-6-quantized
+    * negative log-likelihood of the 1e-6-quantized σ(z/T) (both
+    * transcendentals quantized after evaluation, so the scan is an
+    * integer argmin both engines replay bit-for-bit; ties take the
+    * smaller T). T = 1 sits on the grid, so the fitted NLL can never
+    * exceed the uncalibrated one — the acceptance floor EngineSpec
+    * pins. Stored beside the weight registry ([[ensureClfWeights]])
+    * because serving needs BOTH numbers: production scores with
+    * σ(z/T*), never refits per query. Scale: one val-split scoring
+    * scan × a 76-row broadcast grid collapsing onto 76 rows — the
+    * x111 bounded-grid shape. First caller pays; [[prebuildCaches]]
+    * pays it in Bench's untimed warmup. */
+  private[graft] def ensureClfTemp(s: SparkSession, d: String): String =
+    Store.materialize("clft", "v1", d, "documents") { path =>
       clfTempGrid(s, d)
         .orderBy(col("snll"), col("tq")).limit(1)
         .coalesce(1).write.mode("overwrite").parquet(path)
-    path
-  }
+    }
 
   /** The OPQ-rotated serving store (x114): [[graft.ml.Opq]]'s
     * parametric rotation applied to the corpus, then EXACTLY the
-    * [[ensureIvfPqStore]] pipeline on the rotated vectors — coarse
+    * [[writeIvfPq]] pipeline on the rotated vectors — coarse
     * 16-cell L2 quantizer, residual 8×16 product codebook, codes and
     * cell map — plus the rotation matrix itself (serving must rotate
     * incoming queries with the SAME matrix the corpus was coded
     * under). This is the composition Ge et al. describe as the
     * production layout: OPQ is a drop-in pre-rotation for IVF-PQ. */
-  private[graft] def ensureOpqPqStore(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/opqpq_${tag}_${fixtureFp(d, "embeddings")}"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$path/codes/_SUCCESS"))) {
+  private[graft] def ensureOpqPqStore(s: SparkSession, d: String): String =
+    Store.materialize("opqpq", "v1", d, "embeddings") { path =>
       val (mat, _, _) = graft.ml.Opq.covariance(Tables.embeddings(s, d))
       val rows = graft.ml.Opq.rotationRows(
         graft.ml.Opq.eigensolve(mat, mat.length), m = 8, dsub = 8)
-      val emb = spread(s, Tables.embeddings(s, d))
-        .select(col("vec_id"),
-          graft.ml.Opq.rotateCol(col("embedding"), rows).as("embedding"))
-        .localCheckpoint()
-      val coarse = graft.ml.PqIndex.trainCodebook(emb, m = 1, dsub = 64)
-      val assigned = graft.ml.PqIndex.assign(
-        graft.ml.PqIndex.subvectors(emb, 1, 64), coarse)
-      val resEmb = assigned.as("a").join(broadcast(coarse.as("c")),
-          col("a.m") === col("c.m") && col("a.cell") === col("c.cid"))
-        .select(col("a.vec_id").as("vec_id"), col("a.cell").as("cell"),
-          zip_with(col("a.sub"), col("c.ce"),
-            (x, y) => (x.cast("double") - y.cast("double")).cast("float"))
-            .as("embedding"))
-        .localCheckpoint()
-      val pqCents = graft.ml.PqIndex.trainCodebook(
-        resEmb.select(col("vec_id"), col("embedding")))
-      val codes = graft.ml.PqIndex.encode(
-        resEmb.select(col("vec_id"), col("embedding")), pqCents)
       s.createDataFrame(rows.toSeq.zipWithIndex.map { case (u, o) =>
           (o.toLong + 1L, u.toSeq) })
         .toDF("o", "u")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/rot")
-      coarse.coalesce(1).write.mode("overwrite").parquet(s"$path/coarse")
-      pqCents.coalesce(1).write.mode("overwrite").parquet(s"$path/pqcents")
-      codes.write.mode("overwrite").parquet(s"$path/codes")
-      resEmb.select(col("vec_id"), col("cell")).write.mode("overwrite")
-        .parquet(s"$path/cells")
+      writeIvfPq(spread(s, Tables.embeddings(s, d))
+          .select(col("vec_id"),
+            graft.ml.Opq.rotateCol(col("embedding"), rows).as("embedding"))
+          .localCheckpoint(), path)
+        .write.mode("overwrite").parquet(s"$path/cells")
     }
-    path
-  }
 
   /** Stage the synthetic failure-mode fixtures that rounds ≤8 planted
     * INLINE in three carriers (the round-8 verdict's cleanup note):
@@ -720,12 +643,8 @@ object TrainingData {
     * re-proven bit-identical on every correctness run. Prebuilt
     * untimed ([[prebuildCaches]]); keyed by the fixture
     * fingerprints. */
-  private[graft] def ensurePlantedFixtures(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/planted_${tag}_" +
-      s"${fixtureFp(d, "documents")}_${fixtureFp(d, "embeddings")}"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$path/docs_paginated/_SUCCESS"))) {
+  private[graft] def ensurePlantedFixtures(s: SparkSession, d: String): String =
+    Store.materialize("planted", "v1", d, "documents", "embeddings") { path =>
       val docs = Tables.documents(s, d)
       val base = wsTokens(col("text"))
       docs.select(col("doc_id"),
@@ -781,43 +700,44 @@ object TrainingData {
           array_join(slice(base, lit(9), size(base) - 8), " ").as("text")))
         .write.mode("overwrite").parquet(s"$path/docs_paginated")
     }
-    path
-  }
 
   /** The PRE-BATCH serving index for x109's incremental-maintenance
     * audit: an IVF index trained and built on the base corpus only
     * (vec_id % 10 ≠ 7 — the batch vectors provably never influenced
     * the quantizer), persisted like [[ensureIvfIndex]]. */
-  private def ensureIvfBaseStore(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val path =
-      s"target/ivf_base_${tag}_c16i2_${fixtureFp(d, "embeddings")}"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$path/cells/_SUCCESS")))
+  private def ensureIvfBaseStore(s: SparkSession, d: String): String =
+    Store.materialize("ivf_base", "v1c16i2", d, "embeddings") { path =>
       graft.ml.IvfIndex.save(
         graft.ml.IvfIndex.build(
           spread(s, Tables.embeddings(s, d).filter(col("vec_id") % 10 =!= 7)),
           nCells = 16, lloydIters = 2),
         path)
-    path
-  }
+    }
 
+  /** Build-and-save the x13-shaped IVF index once per fixture (first
+    * caller pays; everyone after — x31's probes, x35's cells — reads
+    * the materialized inverted file from disk). Returns the path. */
   private def ensureIvfIndex(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9.]", "_")
-    // The cache path embeds the build parameters AND the fixture
-    // fingerprint ([[fixtureFp]]).
     val nCells = 16; val lloydIters = 2
-    val path =
-      s"target/ivf_index_${tag}_c${nCells}i${lloydIters}_${fixtureFp(d, "embeddings")}"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$path/cells/_SUCCESS")))
+    Store.materialize("ivf_index", s"v1c${nCells}i$lloydIters", d,
+        "embeddings") { path =>
       graft.ml.IvfIndex.save(
         graft.ml.IvfIndex.build(
           spread(s, Tables.embeddings(s, d)), nCells = nCells, lloydIters),
         path)
-    path
+    }
   }
 
+  /** X31: the persisted-IVF QUERY path — the production side of the
+    * build-once/query-many split that the fused x13 (train + probe,
+    * timed together every run) can't show. The first call per sf-dir
+    * builds and [[graft.ml.IvfIndex.save]]s the on-disk inverted file
+    * (cells partitioned by `cell`); every later call — including every
+    * timed bench pass, since the warm pass pays the build — only loads
+    * it and probes, opening none but the probed cells' files via
+    * dynamic partition pruning (plan-asserted in MlSpec). Same
+    * determinism contract as x13 (shared [[ivfOracle]]); queries are
+    * vec_id 5..9 so the two entries' results stay distinguishable. */
   val x31IvfQuery: Q = (s, d) =>
     graft.ml.IvfIndex.query(
       graft.ml.IvfIndex.loadCached(s, ensureIvfIndex(s, d)),
@@ -1342,16 +1262,12 @@ object TrainingData {
     * text by every downstream consumer. minQuality=0 keeps every doc
     * (calibration wants the full distribution; the threshold comes
     * AFTER calibration). */
-  private def ensureCuratedStaged(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/curated_staged_${tag}_${fixtureFp(d, "documents")}"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$path/_SUCCESS")))
+  private def ensureCuratedStaged(s: SparkSession, d: String): String =
+    Store.materialize("curated_staged", "v1", d, "documents") { path =>
       graft.streaming.DocStream.curate(
         Tables.documents(s, d), minQuality = 0.0, stopwords)
         .write.mode("overwrite").parquet(path)
-    path
-  }
+    }
 
   /** X32b: the single-corpus-scan variant of [[x32QualityCalibration]]
     * — the documented 100 TB path made real. Quality is read from the
@@ -2401,18 +2317,14 @@ object TrainingData {
     * (ADVICE r6). */
   private val sigStoreParams = (16, 4, 3) // (numHashes, bandRows, shingleN)
   private def ensureSigStore(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9.]", "_")
     val (k, b, sh) = sigStoreParams
-    val path =
-      s"target/sig_store_${tag}_k${k}b${b}s${sh}_${fixtureFp(d, "documents")}"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$path/bands/_SUCCESS")))
+    Store.materialize("sig_store", s"v1k${k}b${b}s$sh", d, "documents") { path =>
       graft.dedup.NearDup.saveSignatureStore(
         spread(s, Tables.documents(s, d)
           .filter(col("doc_id") % 1000000 < 200)
           .select(col("doc_id"), col("text"))), path,
         numHashes = k, bandRows = b, shingleN = sh)
-    path
+    }
   }
 
   /** X60: incremental near-dup against a persisted signature store —
@@ -2707,18 +2619,14 @@ object TrainingData {
     * [[ensureSigStore]] cache contract: fixture fingerprint in the
     * path, first caller pays, [[prebuildCaches]] pays it in Bench's
     * untimed warmup). Covers the BASE assets (doc_id < 200 slice). */
-  private def ensureDHashStore(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/dhash_store_${tag}_${fixtureFp(d, "documents")}"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$path/bands/_SUCCESS")))
+  private def ensureDHashStore(s: SparkSession, d: String): String =
+    Store.materialize("dhash_store", "v1", d, "documents") { path =>
       graft.multimodal.Multimodal.saveDHashStore(s,
         graft.multimodal.Multimodal.withBinaryPayload(
           spread(s, Tables.documents(s, d)
             .filter(col("doc_id") % 1000000 < 200)
             .select(col("doc_id"), col("text")))), path)
-    path
-  }
+    }
 
   /** X92: incremental image near-dup against the persisted dHash
     * store — the image twin of x60's signature-store probe and the
@@ -2790,18 +2698,14 @@ object TrainingData {
     * soft weights, graph stats, leakage audits) joins the labels
     * table instead of re-running shingles → pairs → closure.
     * [[prebuildCaches]] pays it in Bench's untimed warmup. */
-  private def ensureDedupLabels(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/dedup_labels_${tag}_${fixtureFp(d, "documents")}"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$path/_SUCCESS")))
+  private def ensureDedupLabels(s: SparkSession, d: String): String =
+    Store.materialize("dedup_labels", "v1", d, "documents") { path =>
       graft.dedup.NearDup.clusters(
         corpusWithDupes(s, d).filter(col("doc_id") % 1000000 < 200),
         ngramJaccardPairs(s, d))
         .select(col("doc_id"), col("canonico"))
         .write.mode("overwrite").parquet(path)
-    path
-  }
+    }
 
   /** X98: staged dedup-label read path — the x32/x32b split for the
     * dedup family: x14 is the compute-the-closure carrier (the cost
@@ -3069,35 +2973,37 @@ object TrainingData {
     * Training cost is measured where it belongs: x13 (coarse Lloyd)
     * and x99 (PQ Lloyd). The oracle retrains everything from scratch,
     * proving the store is bit-identical to a fresh build. */
-  private[graft] def ensureIvfPqStore(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/ivfpq_${tag}_${fixtureFp(d, "embeddings")}"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$path/codes/_SUCCESS"))) {
-      val emb = spread(s, Tables.embeddings(s, d))
-      val coarse = graft.ml.PqIndex.trainCodebook(emb, m = 1, dsub = 64)
-      val assigned = graft.ml.PqIndex.assign(
-        graft.ml.PqIndex.subvectors(emb, 1, 64), coarse)
-      // residuals are corpus-scaled and feed train, encode, AND the
-      // cell map — checkpoint once, cluster-side
-      val resEmb = assigned.as("a").join(broadcast(coarse.as("c")),
-          col("a.m") === col("c.m") && col("a.cell") === col("c.cid"))
-        .select(col("a.vec_id").as("vec_id"), col("a.cell").as("cell"),
-          zip_with(col("a.sub"), col("c.ce"),
-            (x, y) => (x.cast("double") - y.cast("double")).cast("float"))
-            .as("embedding"))
-        .localCheckpoint()
-      val pqCents = graft.ml.PqIndex.trainCodebook(
-        resEmb.select(col("vec_id"), col("embedding")))
-      val codes = graft.ml.PqIndex.encode(
-        resEmb.select(col("vec_id"), col("embedding")), pqCents)
-      coarse.coalesce(1).write.mode("overwrite").parquet(s"$path/coarse")
-      pqCents.coalesce(1).write.mode("overwrite").parquet(s"$path/pqcents")
-      codes.write.mode("overwrite").parquet(s"$path/codes")
-      resEmb.select(col("vec_id"), col("cell")).write.mode("overwrite")
-        .parquet(s"$path/cells")
+  private[graft] def ensureIvfPqStore(s: SparkSession, d: String): String =
+    Store.materialize("ivfpq", "v1", d, "embeddings") { path =>
+      writeIvfPq(spread(s, Tables.embeddings(s, d)), path)
+        .write.mode("overwrite").parquet(s"$path/cells")
     }
-    path
+
+  /** The IVF-PQ build shared by the [[ensureIvfPqStore]] family: a
+    * 16-cell full-width coarse quantizer, the residual 8×16 product
+    * codebook and the residual codes, written to `path`/coarse,
+    * /pqcents and /codes. Returns the (vec_id, cell) map. */
+  private def writeIvfPq(emb: DataFrame, path: String): DataFrame = {
+    val coarse = graft.ml.PqIndex.trainCodebook(emb, m = 1, dsub = 64)
+    val assigned = graft.ml.PqIndex.assign(
+      graft.ml.PqIndex.subvectors(emb, 1, 64), coarse)
+    // residuals are corpus-scaled and feed train, encode, AND the
+    // cell map — checkpoint once, cluster-side
+    val resEmb = assigned.as("a").join(broadcast(coarse.as("c")),
+        col("a.m") === col("c.m") && col("a.cell") === col("c.cid"))
+      .select(col("a.vec_id").as("vec_id"), col("a.cell").as("cell"),
+        zip_with(col("a.sub"), col("c.ce"),
+          (x, y) => (x.cast("double") - y.cast("double")).cast("float"))
+          .as("embedding"))
+      .localCheckpoint()
+    val pqCents = graft.ml.PqIndex.trainCodebook(
+      resEmb.select(col("vec_id"), col("embedding")))
+    val codes = graft.ml.PqIndex.encode(
+      resEmb.select(col("vec_id"), col("embedding")), pqCents)
+    coarse.coalesce(1).write.mode("overwrite").parquet(s"$path/coarse")
+    pqCents.coalesce(1).write.mode("overwrite").parquet(s"$path/pqcents")
+    codes.write.mode("overwrite").parquet(s"$path/codes")
+    resEmb.select(col("vec_id"), col("cell"))
   }
 
   /** x110's BASE-ONLY twin of [[ensureIvfPqStore]] (round-10 verdict
@@ -3110,33 +3016,11 @@ object TrainingData {
     * BASE relation (id 7 is batch → 15 coarse cells; the oracle
     * mirrors the same seed set). The full-corpus store stays what
     * x100/x129 serve from; this store exists for the audit. */
-  private[graft] def ensureIvfPqBase(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/ivfpqbase_${tag}_${fixtureFp(d, "embeddings")}"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$path/codes/_SUCCESS"))) {
-      val emb = spread(s, Tables.embeddings(s, d)
-        .filter(col("vec_id") % 10 =!= 7))
-      val coarse = graft.ml.PqIndex.trainCodebook(emb, m = 1, dsub = 64)
-      val assigned = graft.ml.PqIndex.assign(
-        graft.ml.PqIndex.subvectors(emb, 1, 64), coarse)
-      val resEmb = assigned.as("a").join(broadcast(coarse.as("c")),
-          col("a.m") === col("c.m") && col("a.cell") === col("c.cid"))
-        .select(col("a.vec_id").as("vec_id"), col("a.cell").as("cell"),
-          zip_with(col("a.sub"), col("c.ce"),
-            (x, y) => (x.cast("double") - y.cast("double")).cast("float"))
-            .as("embedding"))
-        .localCheckpoint()
-      val pqCents = graft.ml.PqIndex.trainCodebook(
-        resEmb.select(col("vec_id"), col("embedding")))
-      val codes = graft.ml.PqIndex.encode(
-        resEmb.select(col("vec_id"), col("embedding")), pqCents)
-      coarse.coalesce(1).write.mode("overwrite").parquet(s"$path/coarse")
-      pqCents.coalesce(1).write.mode("overwrite").parquet(s"$path/pqcents")
-      codes.write.mode("overwrite").parquet(s"$path/codes")
+  private[graft] def ensureIvfPqBase(s: SparkSession, d: String): String =
+    Store.materialize("ivfpqbase", "v1", d, "embeddings") { path =>
+      writeIvfPq(spread(s, Tables.embeddings(s, d)
+        .filter(col("vec_id") % 10 =!= 7)), path)
     }
-    path
-  }
 
   /** x100/x129's shared ADC scoring stage over the persisted IVF-PQ
     * store: (qid, nid, dist_q) for every code vector in the query's
@@ -8155,10 +8039,20 @@ object TrainingData {
     * pivoted to the 1-row broadcastable array form the dense scorer
     * consumes: ws(b) = wb, in bucket order. */
   private[graft] def clfWRow(wdf: DataFrame): DataFrame =
-    wdf.groupBy()
-      .agg(transform(
-        array_sort(collect_list(struct(col("bucket"), col("wb")))),
-        e => e.getField("wb")).as("ws"))
+    wdf.groupBy().agg(wsOf.as("ws"))
+
+  /** The aggregate behind [[clfWRow]]/[[trajRow]]: the group's wb
+    * values in bucket order, or an in-plan error unless its buckets
+    * are exactly 0..67 — zip_with against the 68-wide `xs` would
+    * otherwise null-pad a wrong-width relation into NULL scores. */
+  private def wsOf: Column = {
+    val sorted = array_sort(collect_list(
+      struct(col("bucket").cast("long").as("bucket"), col("wb"))))
+    when(transform(sorted, e => e.getField("bucket")) ===
+        sequence(lit(0L), lit(67L)), transform(sorted, e => e.getField("wb")))
+      .otherwise(raise_error(
+        lit("weight relation must hold exactly the 68 buckets 0..67")))
+  }
 
   /** The dense-row logit under the trainer's exact quantization
     * contract: Σ_b round(ws(b)·xs(b)·1e9) as one row-local exact
@@ -8181,9 +8075,7 @@ object TrainingData {
     * scores all snapshots row-locally off the dense feature rows. */
   private[graft] def trajRow(traj: DataFrame): DataFrame =
     traj.groupBy(col("step"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("bucket"), col("wb")))),
-        e => e.getField("wb")).as("ws"))
+      .agg(wsOf.as("ws"))
       .groupBy()
       .agg(array_sort(collect_list(struct(col("step"), col("ws"))))
         .as("snaps"))
@@ -8290,11 +8182,6 @@ object TrainingData {
       dFeat: Int = 68, iters: Int = 20, eta: Double = 16.0): Array[Double] =
     trainQualityClfSteps(tf, n, dFeat, iters, eta).last
 
-  /** [[trainQualityClf]] with the full per-step weight TRAJECTORY
-    * (snapshot after each update — w₁…w₂₀): identical numerics, one
-    * extra array copy per step. x157's dataset cartography scores
-    * every doc under every snapshot, which is the published use of a
-    * training trajectory nobody else consumes. */
   /** Spark's `round(x, 0).cast("long")` on a double, replicated for
     * the trainer's task-side fold: Round on DoubleType evaluates
     * BigDecimal(d).setScale(0, HALF_UP).toDouble (NaN/Inf pass
@@ -8323,6 +8210,11 @@ object TrainingData {
       (if (v < 0) -r else r).toLong
     }
 
+  /** [[trainQualityClf]] with the full per-step weight TRAJECTORY
+    * (snapshot after each update — w₁…w₂₀): identical numerics, one
+    * extra array copy per step. x157's dataset cartography scores
+    * every doc under every snapshot, which is the published use of a
+    * training trajectory nobody else consumes. */
   private[graft] def trainQualityClfSteps(tf: DataFrame, n: Long,
       dFeat: Int = 68, iters: Int = 20,
       eta: Double = 16.0): Seq[Array[Double]] = {
@@ -8373,11 +8265,8 @@ object TrainingData {
     * wb) beside the final-weight registry — built once per fixture
     * like [[ensureClfWeights]] (the same trainer run, all snapshots
     * kept). */
-  private[graft] def ensureClfTrajectory(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/clftraj_${tag}_${fixtureFp(d, "documents")}"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$path/_SUCCESS"))) {
+  private[graft] def ensureClfTrajectory(s: SparkSession, d: String): String =
+    Store.materialize("clftraj", "v1", d, "documents") { path =>
       val (tf, n) = qualityClfTf(s, d)
       val steps = trainQualityClfSteps(tf, n)
       s.createDataFrame(steps.zipWithIndex.flatMap { case (w, i) =>
@@ -8387,8 +8276,6 @@ object TrainingData {
         .toDF("step", "bucket", "wb")
         .coalesce(1).write.mode("overwrite").parquet(path)
     }
-    path
-  }
 
   /** X108: quality-classifier training — the model-based filter step
     * real curation pipelines run where this engine so far only had

@@ -159,8 +159,10 @@ object EventStream {
 
   /** Drive a streaming query to completion against a static directory:
     * memory sink + Trigger.AvailableNow — process everything available,
-    * then terminate. (processAllAvailable with the default trigger spins
-    * empty micro-batches forever under stateful timeouts.) */
+    * then terminate; throws if the query is still running after 120 s.
+    * A processing-time timeout asks for a no-data batch after every
+    * batch, so such a query terminates only with
+    * `spark.sql.streaming.noDataMicroBatches.enabled=false`. */
   def runToMemory(spark: SparkSession, src: DataFrame, name: String,
       mode: OutputMode = OutputMode.Append): DataFrame = {
     // Aggregations over a static directory need Complete mode: Append
@@ -169,8 +171,10 @@ object EventStream {
     val q = src.writeStream.outputMode(mode)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .format("memory").queryName(name).start()
-    q.awaitTermination(120000L)
+    val done = q.awaitTermination(120000L)
     q.stop()
+    if (!done) throw new IllegalStateException(
+      s"streaming query '$name' did not terminate within 120 s")
     spark.table(name)
   }
 }

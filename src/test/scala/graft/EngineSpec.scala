@@ -3868,6 +3868,90 @@ class EngineSpec extends AnyFunSuite {
     assert(rows.size == want, s"emitted ${rows.size} of $want overlapping pairs")
   }
 
+  test("a wrong-width weight relation fails in-plan instead of scoring NULLs") {
+    val wdf = spark.read.parquet(TrainingData.ensureClfWeights(spark, sf))
+    val traj = spark.read.parquet(TrainingData.ensureClfTrajectory(spark, sf))
+    val (tf, _) = TrainingData.qualityClfTf(spark, sf)
+    def raised(run: => Any): Boolean = {
+      val e = intercept[Exception](run)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains("68 buckets")))
+    }
+    assert(raised(TrainingData.clfScores(tf,
+      wdf.filter(col("bucket") < 67L)).collect()), "67 buckets")
+    assert(raised(TrainingData.clfScores(tf, wdf.withColumn("bucket",
+      when(col("bucket") === 0L, 68L).otherwise(col("bucket")))).collect()),
+      "68 buckets with a gap at 0")
+    assert(raised(TrainingData.trajRow(traj.filter(
+      !(col("step") === 3L && col("bucket") === 5L))).collect()),
+      "one trajectory step short a bucket")
+    assert(TrainingData.clfScores(tf, wdf).filter(col("pq").isNull).count() == 0)
+  }
+
+  test("Store: builds once, rebuilds only a bumped version, publishes atomically") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    import scala.jdk.CollectionConverters._
+    val fixture = Files.createTempDirectory("store_fixture")
+    Files.writeString(fixture.resolve("documents.parquet"), "fixture")
+    val d = fixture.toString
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    def probe(name: String, key: String)(body: Path => Unit): String =
+      graft.core.Store.materialize(name, key, d, "documents") { p =>
+        builds.incrementAndGet()
+        Files.createDirectories(Paths.get(p))
+        body(Paths.get(p))
+        Files.writeString(Paths.get(p, "part"), name)
+      }
+    def plain(name: String, key: String) = probe(name, key)(_ => ())
+    def entries(name: String): Seq[String] = {
+      val st = Files.list(Paths.get("target"))
+      try st.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith(s"${name}_") || n.startsWith(s".tmp-$name-"))
+        .toSeq finally st.close()
+    }
+    def deleteTree(p: Path): Unit = {
+      val st = Files.walk(p)
+      try st.iterator().asScala.toSeq.reverse.foreach(Files.delete)
+      finally st.close()
+    }
+    val names = Seq("storeprobe_a", "storeprobe_b", "storeprobe_fail",
+      "storeprobe_race")
+    try {
+      val a = plain("storeprobe_a", "v1")
+      val b = plain("storeprobe_b", "v1")
+      assert(builds.get == 2)
+      assert(plain("storeprobe_a", "v1") == a && plain("storeprobe_b", "v1") == b)
+      assert(builds.get == 2, "a present store must not rebuild")
+      val a2 = plain("storeprobe_a", "v2")
+      assert(a2 != a && builds.get == 3, "a bumped version must rebuild")
+      assert(plain("storeprobe_b", "v1") == b && builds.get == 3,
+        "bumping one store's version must not rebuild another")
+
+      intercept[IllegalStateException](probe("storeprobe_fail", "v1") { _ =>
+        throw new IllegalStateException("build failed")
+      })
+      assert(entries("storeprobe_fail").isEmpty,
+        "a failed build must leave neither a store nor a temp directory")
+
+      // both builders are mid-build before either publishes
+      val barrier = new java.util.concurrent.CyclicBarrier(2)
+      def racer() = probe("storeprobe_race", "v1") { _ =>
+        barrier.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      val got = Await.result(Future.sequence(Seq(Future(racer()), Future(racer()))),
+        2.minutes)
+      assert(got.distinct.size == 1)
+      assert(Files.readString(Paths.get(got.head, "part")) == "storeprobe_race")
+      assert(entries("storeprobe_race") == Seq(Paths.get(got.head).getFileName.toString))
+    } finally {
+      names.flatMap(entries).foreach(n => deleteTree(Paths.get("target", n)))
+      deleteTree(fixture)
+    }
+  }
+
   test("entry flagship returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))

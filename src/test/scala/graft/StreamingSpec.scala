@@ -92,7 +92,12 @@ class StreamingSpec extends AnyFunSuite {
       .parquet(tmp)
       .as[EventStream.Event]
     val sessions = EventStream.sessionize(spark, stream)
-    val out = EventStream.runToMemory(spark, sessions.toDF(), "sessions", OutputMode.Update)
+    // the processing-time timeout asks for a no-data batch after every
+    // batch, so AvailableNow would never finish without this
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(key, "false")
+    val out = try EventStream.runToMemory(spark, sessions.toDF(), "sessions",
+      OutputMode.Update) finally spark.conf.unset(key)
     // one open session per user, counting every event of that user
     val perUser = Tables.events(spark, sf).groupBy("user_id").count()
     val joined = out.as("s").join(perUser.as("b"), Seq("user_id"))
