@@ -1,13 +1,52 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main (driver contract): runs every registered query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
   * A warmup action first separates JVM/session startup from query
   * cost; queries run in sorted-name order for stable comparisons.
+  * A query that throws in the warm pass or any timed run is listed
+  * under "errors" and left out of the timings.
   */
 object Bench {
+  /** One timed run of query `name`: the seconds its action
+    * `fn(spark, sfDir).count()` took, or the error it threw (also
+    * reported on stderr). */
+  private[graft] def timeQuery(spark: SparkSession, sfDir: String, name: String,
+      fn: (SparkSession, String) => DataFrame): Either[Throwable, Double] = {
+    val t0 = System.nanoTime()
+    try {
+      fn(spark, sfDir).count()
+      Right((System.nanoTime() - t0) / 1e9)
+    } catch {
+      case e: Throwable =>
+        System.err.println(s"[bench] $name failed: $e")
+        Left(e)
+    }
+  }
+
+  /** The timed runs' accounting: each pass's total, each query's
+    * fastest run, and the sorted names of the queries that failed.
+    * `passes` are the timed passes, `retries` extra runs of some
+    * queries, `warmFailed` the queries that threw in the untimed warm
+    * pass; a query that threw in any run counts only as an error,
+    * never in a total or a timing. */
+  private[graft] case class Tally(passTotals: Seq[Double],
+      perQuery: Seq[(String, Double)], errors: Seq[String])
+
+  private[graft] def tally(passes: Seq[Seq[(String, Either[Throwable, Double])]],
+      retries: Seq[(String, Either[Throwable, Double])] = Nil,
+      warmFailed: Set[String] = Set.empty): Tally = {
+    val runs = passes.flatten ++ retries
+    val failed = warmFailed ++ runs.collect { case (n, Left(_)) => n }
+    def ok(rs: Seq[(String, Either[Throwable, Double])]) =
+      rs.collect { case (n, Right(t)) if !failed(n) => n -> t }
+    Tally(passes.map(ok(_).map(_._2).sum),
+      ok(runs).groupMapReduce(_._1)(_._2)(math.min).toSeq.sortBy(_._1),
+      failed.toSeq.sorted)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -83,10 +122,10 @@ object Bench {
     // codegen/classload cost here, so the timed pass below measures
     // the per-query latency a long-running cluster actually sees,
     // not first-call JIT noise. Disable with SPARK_GRAFT_WARM_PASS=0.
-    if (sys.env.getOrElse("SPARK_GRAFT_WARM_PASS", "1") == "1")
-      selected.foreach { case (_, fn) =>
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-      }
+    val warmFailed =
+      if (sys.env.getOrElse("SPARK_GRAFT_WARM_PASS", "1") != "1") Set.empty[String]
+      else selected.filter { case (n, fn) => timeQuery(spark, sfDir, n, fn).isLeft }
+        .map(_._1).toSet
     // JMH-style inter-pass GC: a 175-query pass accumulates broadcast
     // and shuffle state that only Spark's ContextCleaner (triggered by
     // driver GC) releases; in a single long-lived 128 GiB JVM that GC
@@ -165,7 +204,7 @@ object Bench {
     def overReceipt(name: String, sec: Double): Boolean =
       receipts.get(name).exists(r => sec > math.max(2.5 * r, r + 0.75))
     val loadBefore = loadAvg(); val jvmsBefore = otherJvms()
-    val raw = (1 to repeat).flatMap { _ =>
+    val passes = (1 to repeat).map { _ =>
       interPassGc()
       var gcFloor = 0.0
       selected.zipWithIndex.map { case ((name, fn), i) =>
@@ -197,20 +236,13 @@ object Bench {
           val f = heapFrac
           if (f > 0.5 && f > gcFloor + 0.15) { interPassGc(); gcFloor = heapFrac }
         }
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        name -> (System.nanoTime() - t0) / 1e9
+        name -> timeQuery(spark, sfDir, name, fn)
       }
     }
     val loadAfter = loadAvg(); val jvmsAfter = otherJvms()
-    // Per-pass totals: two close numbers demonstrate the timed passes
-    // really are steady-state (a big pass1→pass2 drop would mean the
-    // warm pass missed something and min-of-N is hiding cold cost).
-    val passTotals = raw.grouped(selected.size).map(_.map(_._2).sum).toSeq
     // repeat>1: report the MIN per query (steady-state latency), never
     // duplicate JSON keys; "value" totals one representative pass.
-    val minOfPasses = raw.groupBy(_._1).view
-      .mapValues(ts => ts.map(_._2).min).toMap
+    val minOfPasses = tally(passes, warmFailed = warmFailed).perQuery
     // Bounded retry pass: any query whose min-of-N is still >2.5x its
     // isolated receipt gets up to 2 re-timed runs, min kept. A spike
     // that hit both passes (the round-7 failure mode) was transient
@@ -219,20 +251,17 @@ object Bench {
     // stretch the bench unboundedly; remaining offenders are flagged
     // in the sentinel instead of silently shipped.
     val fnByName = selected.toMap
-    val toRetry = minOfPasses.toSeq
+    val toRetry = minOfPasses
       .filter { case (n, t) => overReceipt(n, t) }
       .sortBy { case (n, t) => -(t / receipts(n)) }.take(20).map(_._1)
-    val retried = toRetry.map { name =>
+    val retries = toRetry.flatMap { name =>
       interPassGc()
-      val best = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        try { fnByName(name)(spark, sfDir).count() }
-        catch { case _: Throwable => () }
-        (System.nanoTime() - t0) / 1e9
-      }.min
-      name -> math.min(best, minOfPasses(name))
-    }.toMap
-    val perQuery = (minOfPasses ++ retried).toSeq.sortBy(_._1)
+      (1 to 2).map(_ => name -> timeQuery(spark, sfDir, name, fnByName(name)))
+    }
+    // Per-pass totals: two close numbers demonstrate the timed passes
+    // really are steady-state (a big pass1→pass2 drop would mean the
+    // warm pass missed something and min-of-N is hiding cold cost).
+    val Tally(passTotals, perQuery, errors) = tally(passes, retries, warmFailed)
     // Receipt-ratio sentinel: the artifact self-reports how far each
     // final number sits from its isolated receipt. A clean capture
     // reads receipt_flags:{} — anything else is visibly suspect.
@@ -316,6 +345,11 @@ object Bench {
       "x168_curriculum_schedule", "x173_gradient_noise",
       "x175_drift_c2st", "x178_pagerank_canonical", "x179_coverage_select")
     val qmap = perQuery.toMap
+    // Failed queries, charset-pinned like the argmax; the contract line
+    // carries at most `cap` names (n_queries still drops by every one).
+    def errorsJson(cap: Int) = ""","errors":""" + errors.take(cap)
+      .map(n => "\"" + n.filter(c => c.isLetterOrDigit || c == '_') + "\"")
+      .mkString("[", ",", "]")
     // Sentinel block appended to both the file and the contract line:
     // "protocol" names the measurement (min over `repeat` timed passes
     // after one untimed warm pass); load/jvms expose contention.
@@ -324,10 +358,10 @@ object Bench {
     val fullPath = java.nio.file.Paths.get("target/bench_full.json")
     java.nio.file.Files.createDirectories(fullPath.getParent)
     java.nio.file.Files.writeString(fullPath,
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${perQuery.size},"queries":${jsonMap(perQuery)},"sf":$sfNum,"sf_dir":"$sfDir"$sentinel}""")
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${perQuery.size},"queries":${jsonMap(perQuery)},"sf":$sfNum,"sf_dir":"$sfDir"$sentinel${errorsJson(errors.size)}}""")
     def lineFor(names: Seq[String]) = {
       val qs = jsonMap(names.flatMap(n => qmap.get(n).map(n -> _)))
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${perQuery.size},"queries":$qs,"sf":$sfNum,"sf_dir":"$sfDir"$sentinel}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${perQuery.size},"queries":$qs,"sf":$sfNum,"sf_dir":"$sfDir"$sentinel${errorsJson(10)}}"""
     }
     // never abort a finished run over line length: drop headline
     // entries until the contract line fits the driver's capture

@@ -24,7 +24,12 @@ object SparkEntry {
       (SortsSetOps.defs, SortsSetOps.oracles),
       (Scalars.defs, Scalars.oracles),
       (Json.defs, Json.oracles),
-      (TrainingData.defs, TrainingData.oracles),
+      (TrainingDataDedup.defs, TrainingDataDedup.oracles),
+      (TrainingDataAnn.defs, TrainingDataAnn.oracles),
+      (TrainingDataLm.defs, TrainingDataLm.oracles),
+      (TrainingDataClassifier.defs, TrainingDataClassifier.oracles),
+      (TrainingDataMixture.defs, TrainingDataMixture.oracles),
+      (TrainingDataQuality.defs, TrainingDataQuality.oracles),
       (MlEtl.defs, MlEtl.oracles),
       (Sources.defs, Sources.oracles),
       (Reports.defs, Reports.oracles),
@@ -34,10 +39,20 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.iterator.flatMap(_._1).toMap
+    merge(modules.map(_._1))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys → rows-only check. */
   def oracleSql: Map[String, String] =
-    modules.iterator.flatMap(_._2).toMap
+    merge(modules.map(_._2))
+
+  /** The union of the modules' maps; a name registered by two modules
+    * fails instead of silently keeping one of them. */
+  private[graft] def merge[V](maps: Seq[Map[String, V]]): Map[String, V] =
+    maps.foldLeft(Map.empty[String, V]) { (acc, m) =>
+      val dup = acc.keySet.intersect(m.keySet)
+      require(dup.isEmpty,
+        s"registered by two modules: ${dup.toSeq.sorted.mkString(", ")}")
+      acc ++ m
+    }
 }

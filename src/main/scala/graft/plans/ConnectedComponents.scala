@@ -32,9 +32,10 @@ import org.apache.spark.sql.functions._
   * references and is unpersisted immediately — peak checkpoint
   * storage is the adjacency plus two label tables (the round being
   * built and its predecessor), independent of round count. On exit
-  * the result rides ONE final label snapshot and everything else is
-  * freed. Without this, each invocation would retain O(rounds) of
-  * checkpoint blocks for the life of the session — in a long-running
+  * the result is the last round's snapshot (already materialized, so
+  * no extra job) and only the adjacency is freed. Without this, each
+  * invocation would retain O(rounds) of checkpoint blocks for the
+  * life of the session — in a long-running
   * session (or a many-query benchmark) the accumulated storage
   * squeezes execution memory for every query that follows.
   */
@@ -99,13 +100,10 @@ object ConnectedComponents {
       labels = next.select(col("id"), col("label"))
       round += 1
     }
-    // One final snapshot carries the result; the last loop snapshot
-    // and the adjacency are freed now, so a CC call leaves behind
-    // exactly one (id, label) table's worth of storage.
-    val result = labels.localCheckpoint()
-    freeCheckpoint(labels)
+    // The last round's snapshot carries the result; the adjacency is
+    // freed now, so a CC call leaves behind one label table's storage.
     freeCheckpoint(adj)
-    (result, round)
+    (labels, round)
   }
 
   /** Labels only (see [[minLabelWithRounds]]). */

@@ -1,16 +1,22 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{Store, Tables}
-import graft.functions.VectorExpressions.cosineSim
 import graft.text.TextFunctions._
 
 /** Large-scale training-data pipeline operators (beyond-reference
-  * extensions, BASELINE.json north star): deduplication, text
-  * analysis, similarity search over the `documents` / `embeddings`
-  * tables.
+  * extensions, BASELINE.json north star) over the `documents` /
+  * `embeddings` tables, split by family:
+  * [[TrainingDataDedup]] (exact, near-dup and staged dedup),
+  * [[TrainingDataAnn]] (vector search and embedding analytics),
+  * [[TrainingDataLm]] (tokenizers and n-gram language models),
+  * [[TrainingDataClassifier]] (the quality classifier and its
+  * consumers), [[TrainingDataMixture]] (mixture weights and data
+  * selection) and [[TrainingDataQuality]] (text-quality filters and
+  * audits). Each family object holds its queries, its `ensure*`
+  * persisted stores and its DuckDB oracle SQL; this object keeps the
+  * helpers more than one family uses and [[prebuildCaches]].
   *
   * Scale design:
   * - exact dedup = hash-groupBy on a fingerprint (one shuffle of
@@ -32,15 +38,15 @@ object TrainingData {
     * at production scale the scan already yields many splits and this
     * repartition disappears; here it is the difference between 1 and
     * 32 concurrent tasks in the compute-bound stages. */
-  private def spread(s: SparkSession, df: DataFrame): DataFrame =
+  private[queries] def spread(s: SparkSession, df: DataFrame): DataFrame =
     df.repartition(s.sparkContext.defaultParallelism)
 
   /** Half-away-from-zero rounding of the exact rational s/n in PURE
     * BIGINT arithmetic: sign(s)·((2·|s| + n) div (2·n)), n > 0.
     * Replaces `round(CAST(s AS DOUBLE)/n, 0)` wherever s and n are
     * exact integers: such a ratio lands on exactly .5 whenever
-    * s mod n = n/2 (≈ one doc in n_tok — the round-6 judge measured 7
-    * live boundary docs in x42 and 5 in x39 at sf0.01), and exact-.5
+    * s mod n = n/2 (≈ one doc in n_tok — 7 live boundary docs were
+    * measured in x42 and 5 in x39 at sf0.01), and exact-.5
     * DOUBLE rounding is engine- and version-dependent (half-away vs
     * half-even). With integer `div` no double ever carries a .5; the
     * DuckDB twin is `sign·((2·abs(s) + n) // (2·n))` — both division
@@ -49,73 +55,18 @@ object TrainingData {
     * round(ln(·)·1e4) are out of hazard scope: a transcendental's
     * double hits an exact .5 with probability ~2⁻⁵² per value, vs the
     * systematic 1/n rate of small-denominator rationals.
-    * PropertySpec pins ≡ BigDecimal HALF_UP incl. the judge's
+    * PropertySpec pins ≡ BigDecimal HALF_UP incl. those
     * boundary docs. */
   private[graft] def intRoundHalfAway(s: Column, n: Column): Column =
     when(s < 0, lit(-1L)).otherwise(lit(1L)) *
       call_function("div", lit(2L) * abs(s) + n, lit(2L) * n)
 
-  private val stopwords = Seq("the", "a", "of", "and")
-  private val markerSets: Seq[(String, Seq[String])] = Seq(
-    "en" -> Seq("the", "a", "and", "of"),
-    "pt" -> Seq("de", "o", "da", "em"),
-    "de" -> Seq("der", "die", "das", "und"))
-
-  // ---------------------------------------------------------------- text
-
-  /** X9: token counting — whitespace + BPE-ish regex. */
-  val x9TokenCount: Q = (s, d) =>
-    Tables.documents(s, d)
-      .select(col("doc_id"),
-        tokenCount(col("text")).as("n_tok"),
-        bpeishCount(col("text")).as("n_bpeish"))
-      .orderBy(col("doc_id"))
-
-  /** X8: quality scoring — length / punctuation / stopword signals. */
-  val x8QualityScore: Q = (s, d) =>
-    Tables.documents(s, d)
-      .select(col("doc_id"),
-        tokenCount(col("text")).as("n_tok"),
-        round(punctRatio(col("text")), 4).as("punct_ratio"),
-        round(stopwordRatio(col("text"), stopwords), 4).as("stop_ratio"),
-        qualityScore(col("text"), stopwords).as("quality"))
-      .orderBy(col("doc_id"))
-
-  /** X7: marker-word language ID heuristic. */
-  val x7LangId: Q = (s, d) =>
-    Tables.documents(s, d)
-      .select(col("doc_id"), langId(col("text"), markerSets).as("lang_detectada"))
-      .orderBy(col("doc_id"))
-
-  /** X10: document fingerprinting (md5 of normalized text + short key). */
-  val x10Fingerprint: Q = (s, d) =>
-    Tables.documents(s, d)
-      .select(col("doc_id"),
-        fingerprint(col("text")).as("fp"),
-        fingerprintShort(col("text")).as("fp_short"))
-      .orderBy(col("doc_id"))
-
-  /** X16: consistent stratified sampling — k docs per language, chosen
-    * by md5(doc_id) order. Hash-rank sampling is the scale idiom for
-    * training-data pipelines: uniform-ish, reproducible across reruns
-    * and engines (no RNG state), and mergeable (the hash order is
-    * global, so partial samples combine exactly — here it runs on the
-    * engine's sort-free TopKPerGroup operator, so the full corpus is
-    * never sorted). */
-  val x16StratifiedSample: Q = (s, d) =>
-    graft.plans.TopK.perGroup(
-      Tables.documents(s, d)
-        .withColumn("amostra_chave", md5(col("doc_id").cast("string"))),
-      Seq("lang"), Seq(("amostra_chave", false)), 5)
-      .select(col("lang"), col("doc_id"), col("amostra_chave"))
-      .orderBy(col("lang"), col("amostra_chave"))
-
-  // --------------------------------------------------------------- dedup
+  private[queries] val stopwords = Seq("the", "a", "of", "and")
 
   /** Documents plus synthesized duplicates (exact copies, id+1M) and
     * near-duplicates (one token appended, id+2M) — the corpus the
     * dedup operators act on, since the generated table has no dupes. */
-  private def corpusWithDupes(s: SparkSession, d: String): DataFrame = {
+  private[queries] def corpusWithDupes(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
     val exact = docs.select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
     val near = docs.select((col("doc_id") + 2000000L).as("doc_id"),
@@ -123,517 +74,31 @@ object TrainingData {
     docs.unionByName(exact).unionByName(near)
   }
 
-  private val corpusSql =
+  private[queries] def corpusSql: String =
     """(SELECT doc_id, text FROM documents
        UNION ALL SELECT doc_id + 1000000, text FROM documents
        UNION ALL SELECT doc_id + 2000000, text || ' extra' FROM documents)"""
 
-  /** X1: exact dedup — hash-groupBy on fingerprint, keep first id.
-    * At scale this shuffles only (fp, id) pairs.
-    * ([[graft.dedup.NearDup.exactDedup]] — the x1/x2/x4/x14 queries
-    * delegate to the reusable dedup facade, so the DuckDB oracles
-    * cover the library code users call on their own corpora.) */
-  val x1DedupExact: Q = (s, d) =>
-    graft.dedup.NearDup.exactDedup(corpusWithDupes(s, d))
-      .orderBy(col("doc_id_mantido"))
-
-  /** X4: exact n-gram Jaccard near-dup pairs (3-word shingles,
-    * J ≥ 0.5) — the verification primitive LSH candidates are checked
-    * against ([[graft.dedup.NearDup.ngramJaccardPairs]]). */
-  private def ngramJaccardPairs(s: SparkSession, d: String): DataFrame =
-    graft.dedup.NearDup.ngramJaccardPairs(
-      spread(s, corpusWithDupes(s, d).filter(col("doc_id") % 1000000 < 200)))
-
-  val x4NgramJaccard: Q = (s, d) =>
-    ngramJaccardPairs(s, d).orderBy(col("id_a"), col("id_b"))
-
-  /** X14: near-dup clustering — connected components over the exact
-    * Jaccard pair graph (x4, J ≥ 0.5), labeling every corpus doc with
-    * the minimum doc_id of its duplicate component ("canonico"); the
-    * survivor set is `sobrevivente = (doc_id == canonico)`. This is
-    * the stage after pair generation in a real dedup pipeline: pairs
-    * alone don't say which doc to keep when dup relations chain
-    * (A~B, B~C but A!~C).
-    *
-    * Spark-first CC without GraphX: [[graft.plans.ConnectedComponents]]
-    * (min-label hooking + pointer-doubling shortcut, O(log diameter)
-    * rounds — see its scaladoc; PropertySpec pins both the labels
-    * against union-find and the round bound on a path graph). The
-    * fixpoint equals the transitive closure the oracle computes with
-    * a recursive CTE. */
-  val x14DedupClusters: Q = (s, d) =>
-    graft.dedup.NearDup.clusters(
-      corpusWithDupes(s, d).filter(col("doc_id") % 1000000 < 200),
-      ngramJaccardPairs(s, d))
-      .orderBy(col("doc_id"))
-
-  /** X24: end-to-end dedup — the DEDUPLICATED CORPUS itself
-    * ([[graft.dedup.NearDup.survivors]]): transitive-closure clusters
-    * over the exact pair graph, one canonical doc kept per component,
-    * texts joined back. The operator a training pipeline actually
-    * calls; x14 exposes the labels, this exposes the output corpus. */
-  val x24DedupSurvivors: Q = (s, d) =>
-    graft.dedup.NearDup.survivors(
-      corpusWithDupes(s, d).filter(col("doc_id") % 1000000 < 200),
-      ngramJaccardPairs(s, d))
-      .select(col("doc_id"), col("text"))
-      .orderBy(col("doc_id"))
-
-  /** X152: quality-aware dedup survivor policy — modern curation
-    * stacks (FineWeb, Dolma, SlimPajama) keep ONE member per near-dup
-    * cluster, and WHICH member matters: x24's min-id rule is
-    * arbitrary, while production pipelines keep the highest-quality
-    * member (longest / cleanest — the re-crawl of a page with less
-    * boilerplate should win over the first-crawled copy). Same
-    * cluster machinery as x14/x24 ([[graft.dedup.NearDup.clusters]] —
-    * banded candidates, O(log diameter) CC, never all-pairs), then a
-    * per-cluster argmax of the x8 quality score (q4 DESC, doc_id ASC
-    * tie) via a map-side-combinable max_by — no window over raw docs.
-    * Output per multi-member cluster: size, the quality keeper, its
-    * score, and whether the policy DIFFERS from min-id — the audit
-    * column that prices switching survivor rules on an existing
-    * corpus. */
-  val x152QualitySurvivor: Q = (s, d) => {
-    val corpus = corpusWithDupes(s, d).filter(col("doc_id") % 1000000 < 200)
-    val cl = graft.dedup.NearDup.clusters(corpus, ngramJaccardPairs(s, d))
-    val q = corpus.select(col("doc_id"),
-      round(qualityScore(col("text"), stopwords) * 1e4, 0).cast("long")
-        .as("q4"))
-    cl.select(col("doc_id"), col("canonico")).join(q, Seq("doc_id"))
-      .groupBy(col("canonico"))
-      .agg(count(lit(1)).as("n_membros"),
-        max_by(struct(col("doc_id").as("keeper"), col("q4").as("keeper_q4")),
-          struct(col("q4"), (-col("doc_id")).as("tb"))).as("best"))
-      .filter(col("n_membros") >= 2)
-      .select(col("canonico"), col("n_membros"),
-        col("best.keeper").as("keeper"),
-        (col("best.keeper_q4").cast("double") / 1e4).as("keeper_q"),
-        (col("best.keeper") =!= col("canonico")).as("policy_differs"))
-      .orderBy(col("canonico"))
-  }
-
-  /** X2: MinHash + LSH near-dup detection (shingle → k=16 minhashes →
-    * 4 bands × 4 rows → bucket join → exact-Jaccard verify ≥ 0.5) —
-    * [[graft.dedup.NearDup.minhashLshPairs]]. Candidate generation
-    * never compares all pairs — at 100 TB the band join only collides
-    * plausibly-similar docs. Signatures are per-row array folds (no
-    * explode/groupBy shuffle), the bucket self-join carries both
-    * shingle arrays so the exact verify is inline, and the md5-based
-    * hash family is engine-portable → full DuckDB oracle; ScalaTest
-    * additionally asserts recall vs x4's exact pairs. */
-  val x2DedupMinhash: Q = (s, d) =>
-    graft.dedup.NearDup.minhashLshPairs(
-      spread(s, corpusWithDupes(s, d).filter(col("doc_id") % 1000000 < 200)))
-      .orderBy(col("id_a"), col("id_b"))
-
-  /** 16-bit hash of a token from its md5 prefix — portable across
-    * engines (md5 is identical; hex parsed positionally). */
-  private def md5Hash16(c: Column): Column = {
-    val hex = substring(md5(c), 1, 4)
-    (0 until 4).map { i =>
-      (instr(lit("0123456789abcdef"), substring(hex, i + 1, 1)) - 1) *
-        lit(1 << (4 * (3 - i)))
-    }.reduce(_ + _)
-  }
-
-  /** X3: SimHash signatures (16-bit): per-bit ±1 votes over distinct
-    * tokens, sign → bit. Same computation expressed in the oracle SQL. */
-  val x3Simhash: Q = (s, d) => {
-    val toks = spread(s, Tables.documents(s, d))
-      .select(col("doc_id"), explode(distinctTokens(col("text"))).as("tok"))
-      .withColumn("h", md5Hash16(col("tok")))
-    val votes = (0 until 16).map { i =>
-      sum(when(shiftright(col("h"), i).bitwiseAND(1) === 1, 1).otherwise(-1))
-        .as(s"v$i")
-    }
-    toks.groupBy(col("doc_id")).agg(votes.head, votes.tail: _*)
-      .select(col("doc_id"),
-        (0 until 16).map(i =>
-          when(col(s"v$i") > 0, lit(1 << i)).otherwise(lit(0)))
-          .reduce(_ + _).as("simhash"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** 32-bit token hash from the md5 prefix (delegates to the one
-    * positional hex parse, [[graft.dedup.NearDup.md5Hash32At]]). */
-  private def md5Hash32(c: Column): Column =
-    graft.dedup.NearDup.md5Hash32(c)
-
-  /** 64-bit token hash: two positional 32-bit md5 parses assembled
-    * bitwise (a single positional sum of 16 hex digits would overflow
-    * signed 64-bit arithmetic at digit 15 × 16^15). */
-  private def md5Hash64(c: Column): Column =
-    shiftleft(graft.dedup.NearDup.md5Hash32At(c, 1), 32)
-      .bitwiseOR(graft.dedup.NearDup.md5Hash32At(c, 9))
-
-  /** Width-parameterized simhash signature per doc over the dedup
-    * corpus: per-bit ±1 votes over distinct tokens, sign → bit. The
-    * signature assembles by bitwise OR (disjoint bits) so the 64-bit
-    * sign bit (1L << 63) never rides an ANSI-checked addition. */
-  private def simhashSigs(s: SparkSession, d: String, bits: Int): DataFrame = {
-    require(bits == 32 || bits == 64, s"unsupported simhash width $bits")
-    val hash = if (bits == 64) md5Hash64(col("tok")) else md5Hash32(col("tok"))
-    val toks = corpusWithDupes(s, d).filter(col("doc_id") % 1000000 < 200)
-      .select(col("doc_id"), explode(distinctTokens(col("text"))).as("tok"))
-      .withColumn("h", hash)
-    val votes = (0 until bits).map { i =>
-      sum(when(shiftright(col("h"), i).bitwiseAND(1) === 1, 1).otherwise(-1))
-        .as(s"v$i")
-    }
-    toks.groupBy(col("doc_id")).agg(votes.head, votes.tail: _*)
-      .select(col("doc_id"),
-        (0 until bits).map(i =>
-          when(col(s"v$i") > 0, lit(1L << i)).otherwise(lit(0L)))
-          .reduce(_.bitwiseOR(_)).as("simhash"))
-  }
-
-  /** Banded near-dup pairs over precomputed simhash signatures:
-    * docs sharing any band bucket become candidates; exact hamming
-    * (bit_count of xor) ≤ `maxHamming` verifies. LOSSLESS whenever
-    * `maxHamming < nBands` (pigeonhole: the differing bits cannot
-    * touch every band, so one band matches exactly) — PropertySpec
-    * pins this against the n² scan at the 64-bit production width. */
-  def simhashBandedPairs(
-      sigs: DataFrame, bandBits: Int, nBands: Int, maxHamming: Int): DataFrame = {
-    val mask = (1L << bandBits) - 1
-    val bands = sigs.select(col("doc_id"), col("simhash"),
-      explode(array((0 until nBands).map(b =>
-        struct(lit(b).as("band"),
-          shiftright(col("simhash"), b * bandBits).bitwiseAND(mask).as("key"))): _*))
-        .as("bk"))
-      .select(col("doc_id"), col("simhash"),
-        col("bk.band").as("band"), col("bk.key").as("key"))
-    bands.as("a").join(bands.as("b"), Seq("band", "key"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        col("a.simhash").as("sa"), col("b.simhash").as("sb"))
-      .dropDuplicates("id_a", "id_b")
-      .withColumn("hamming",
-        bit_count(col("sa").bitwiseXOR(col("sb"))).cast("int"))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming"))
-  }
-
-  /** X23 / production-width (64-bit, 4×16-bit bands) simhash dedup —
-    * same plan shape as x15, wider signature (lower false-candidate
-    * rate at corpus scale). Oracle-proven: DuckDB rebuilds the 64-bit
-    * signatures (hi/lo 32-bit votes, two's-complement sign-bit
-    * assembly) and runs the n² hamming scan the lossless banding must
-    * equal; PropertySpec pins banded == n² on the Spark side too. */
-  def simhash64Dedup(s: SparkSession, d: String): DataFrame =
-    simhashBandedPairs(simhashSigs(s, d, 64), bandBits = 16, nBands = 4,
-      maxHamming = 3)
-      .orderBy(col("id_a"), col("id_b"))
-
-  /** 64-bit signatures (test hook for the full-width pin). */
-  def simhashSigs64(s: SparkSession, d: String): DataFrame =
-    simhashSigs(s, d, 64)
-
-  /** All-pairs hamming≤k reference for the lossless-blocking pin. */
-  def simhashBrutePairs(s: SparkSession, d: String, bits: Int,
-      maxHamming: Int): DataFrame = {
-    val sigs = simhashSigs(s, d, bits)
-    sigs.as("a").crossJoin(sigs.as("b"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .withColumn("hamming",
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).cast("int"))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        col("hamming"))
-  }
-
-  /** X15: SimHash near-dup pairs with banded blocking — the SimHash
-    * DEDUP operator (x3 only emits signatures). 32-bit signatures
-    * split into 4 bands of 8 bits; docs sharing any band bucket become
-    * candidates; exact hamming (bit_count of xor) ≤ 3 verifies.
-    *
-    * The blocking is LOSSLESS for this threshold by pigeonhole: ≤ 3
-    * differing bits cannot touch all 4 bands, so at least one band
-    * matches exactly — the LSH-shaped plan returns EXACTLY the n² scan
-    * result (which is what the oracle computes), while only ever
-    * joining within band buckets. Production width is 64-bit with
-    * 16-bit bands ([[simhash64Dedup]], PropertySpec-pinned); 32-bit
-    * keeps the oracle portable. */
-  val x15SimhashDedup: Q = (s, d) =>
-    simhashBandedPairs(simhashSigs(s, d, 32), bandBits = 8, nBands = 4,
-      maxHamming = 3)
-      .orderBy(col("id_a"), col("id_b"))
-
-  // ---------------------------------------------------------- similarity
-
-  private def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  // Note: an unrolled element_at multiply-add chain was measured 4×
-  // SLOWER than the zip_with/aggregate fold (per-element array access
-  // overhead + oversized codegen method) — HOF dot is the fast form.
-
-  /** X5: brute-force cosine top-k (k=10) for query vectors vec_id<5 —
-    * the correctness baseline for ANN. Query side is tiny → broadcast;
-    * the corpus is scanned once, scores rounded to 4dp for stable
-    * cross-engine ranking. */
-  val x5AnnCosine: Q = (s, d) => {
-    val emb = spread(s, Tables.embeddings(s, d))
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val scored = emb.select(col("vec_id").as("nid"), col("embedding").as("ne"))
-      .crossJoin(broadcast(queries))
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("score", round(cosineSim(col("qe"), col("ne")), 4))
-    val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("nid"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 10)
-      .select(col("qid"), col("nid"), col("score"), col("rk"))
-      .orderBy(col("qid"), col("rk"))
-  }
-
-  /** X6: LSH-bucketed ANN (the scale path): L=4 hash tables of 6
-    * random-hyperplane signs each (deterministic md5-seeded ±1 plane
-    * components). A vector lands in one bucket per table; candidates =
-    * union over tables of same-bucket vectors; exact cosine only on
-    * candidates. Multi-table trades a constant factor of work for
-    * recall — the standard LSH knob. The plane signs derive from md5
-    * parity, so the whole pipeline has a DuckDB oracle; ScalaTest
-    * asserts recall vs x5's exact top-k. */
-  val x6AnnLsh: Q = (s, d) => {
-    // The synthetic embeddings are near-isotropic (pairwise cosine ≈ 0,
-    // no label clustering), the hardest case for LSH: recall here is
-    // data-limited, not a bug. 8 tables × 4 planes ≈ 0.57 expected
-    // recall at ~2× candidate reduction; real clustered embeddings get
-    // far better trade-offs at the same settings.
-    val tables = 8
-    val planes = 4
-    val dims = 64
-    val emb = spread(s, Tables.embeddings(s, d))
-    // Deterministic ±1 plane components, computed at PLAN time (md5
-    // parity of "table-plane-dim") and embedded as literal arrays — the
-    // per-row work is then one zip_with+aggregate per plane instead of
-    // a 64-term unrolled expression (keeps codegen small and fast).
-    def planeSigns(t: Int, p: Int): Seq[Double] = (0 until dims).map { i =>
-      val h = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$t-$p-$i".getBytes("UTF-8"))
-      val v = ((h(0) & 0xff) << 8) | (h(1) & 0xff)
-      if (v % 2 == 0) 1.0 else -1.0
-    }
-    def sketch(e: Column, t: Int): Column = {
-      val bits = (0 until planes).map { p =>
-        val signs = array(planeSigns(t, p).map(lit): _*)
-        val proj = aggregate(
-          zip_with(e, signs, (x, sg) => x.cast("double") * sg),
-          lit(0.0), (acc, v) => acc + v)
-        when(proj > 0, lit(1 << p)).otherwise(lit(0))
-      }
-      bits.reduce(_ + _)
-    }
-    val sk = emb.select(col("vec_id") +: col("embedding") +:
-      (0 until tables).map(t => sketch(col("embedding"), t).as(s"b$t")): _*)
-    val buckets = sk.select(col("vec_id"), col("embedding"),
-      explode(array((0 until tables).map(t =>
-        concat_ws(":", lit(t), col(s"b$t"))): _*)).as("bucket"))
-    val queries = buckets.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("bucket"))
-    val cands = buckets
-      .select(col("vec_id").as("nid"), col("embedding").as("ne"), col("bucket"))
-      .join(broadcast(queries), Seq("bucket"))
-      .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("qe"), col("nid"), col("ne")).distinct()
-      .withColumn("score", round(cosineSim(col("qe"), col("ne")), 4))
-    val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("nid"))
-    cands.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 10)
-      .select(col("qid"), col("nid"), col("score"), col("rk"))
-      .orderBy(col("qid"), col("rk"))
-  }
-
-  /** X12: embedding-cosine near-duplicate pairs (threshold 0.4) —
-    * brute-force over the corpus; at 100 TB the same predicate runs
-    * after an LSH/IVF candidate pass (x6/x13 topology). Oracle-checked
-    * pairwise cosines. */
-  val x12DedupCosine: Q = (s, d) => {
-    // norms precomputed once per side (500 rows) — the n² pair stage
-    // then evaluates a single higher-order dot per pair instead of 3
-    val a = spread(s, Tables.embeddings(s, d))
-      .select(col("vec_id").as("id_a"), col("embedding").as("ea"))
-    val b = Tables.embeddings(s, d)
-      .select(col("vec_id").as("id_b"), col("embedding").as("eb"))
-    a.crossJoin(b).filter(col("id_a") < col("id_b"))
-      .withColumn("cos", round(cosineSim(col("ea"), col("eb")), 4))
-      .filter(col("cos") >= 0.4)
-      .select(col("id_a"), col("id_b"), col("cos"))
-      .orderBy(col("id_a"), col("id_b"))
-  }
-
-  /** X13: IVF ANN (the other scale path) on the reusable
-    * [[graft.ml.IvfIndex]] (build-once/query-many API): coarse
-    * quantizer = 16 centroids seeded from the first 16 vectors and
-    * refined by two deterministic Lloyd iterations (k-means is Lloyd
-    * 1982; the IVF index is Sivic & Zisserman's inverted file),
-    * every vector assigned to its nearest cell; queries probe the
-    * nprobe=4 nearest cells and run exact cosine only there.
-    * Inverted-file topology: the corpus scan partitions by cell at
-    * write time at scale. Fully deterministic (integer-sum centroid
-    * means, 6dp-rounded argmax) → DuckDB oracle replays the identical
-    * training. ScalaTest asserts recall vs x5 plus cell balance vs the
-    * untrained seed quantizer — on the near-isotropic fixture, recall
-    * at fixed nprobe tracks the probed corpus fraction, so training's
-    * payoff shows up as bounded cell size (query-cost variance), while
-    * on real clustered embeddings it shows up as recall. */
-  def ivfCells(s: SparkSession, d: String, lloydIters: Int): DataFrame =
-    graft.ml.IvfIndex
-      .build(spread(s, Tables.embeddings(s, d)), nCells = 16, lloydIters)
-      .cells
-
-  def ivfTopK(s: SparkSession, d: String, lloydIters: Int): DataFrame = {
-    val emb = spread(s, Tables.embeddings(s, d))
-    val index = graft.ml.IvfIndex.build(emb, nCells = 16, lloydIters)
-    graft.ml.IvfIndex
-      .query(index, emb.filter(col("vec_id") < 5), nprobe = 4, topK = 10)
-      .orderBy(col("qid"), col("rk"))
-  }
-
-  val x13AnnIvf: Q = (s, d) => ivfTopK(s, d, lloydIters = 2)
-
   /** Every persisted store a first caller would otherwise build inside
     * a timed query. [[graft.Bench]] calls this from its UNTIMED warmup
-    * so no timed pass conflates build cost with query cost (round-7
-    * verdict item 1: the official artifact stamped x60 at 10.98 s vs a
-    * 0.90 s receipt). A store already built costs one stat call. */
-  private val stores: Seq[(SparkSession, String) => String] = Seq(
-    ensureIvfIndex, ensureSigStore, ensureCuratedStaged,
-    ensureDHashStore, ensureDedupLabels, ensureIvfPqStore,
-    ensureIvfBaseStore, ensureIvfPqBase,
-    ensurePlantedFixtures,
-    ensureOpqPqStore, ensureClfWeights,
-    ensureWinnowStore, ensureClfTemp,
-    ensureClfTrajectory)
-
-  def prebuildCaches(s: SparkSession, d: String): Unit =
-    stores.foreach(_(s, d))
-
-  /** The ingest-staged winnowed-fingerprint table over the raw corpus
-    * — the x32b/x98 staged contract for the winnowing family:
-    * production fingerprints each doc ONCE at ingest (the corpus-wide
-    * positional-hash scan is the cost, measured standalone in x126's
-    * compute path) and every downstream analytic reads the stored
-    * (doc_id, fps) rows. First caller pays;
-    * [[prebuildCaches]] pays it in Bench's untimed warmup. */
-  private def ensureWinnowStore(s: SparkSession, d: String): String =
-    // the store also carries each doc's k-gram count and selected-
-    // position count (ingest-time stats, computed for free during
-    // fingerprinting), so x126's corpus-wide audit reads the staged
-    // table instead of re-scanning text (round-9 verdict item 3)
-    Store.materialize("winnow2", "v1", d, "documents") { path =>
-      graft.dedup.NearDup.winnowedFingerprints(
-          spread(s, Tables.documents(s, d).select(col("doc_id"), col("text"))))
-        .select(col("doc_id"), col("m"),
-          size(col("sel")).cast("long").as("n_sel"), col("fps"))
-        .write.mode("overwrite").parquet(path)
-    }
-
-  /** The persisted model registry for x108's trained quality
-    * classifier: 68 (bucket, weight) rows, trained once per fixture
-    * fingerprint and read back by every downstream consumer (x118's
-    * calibration audit) — the x98 staged-read contract applied to
-    * MODEL artifacts instead of labels. Production pipelines never
-    * retrain a filter model per query; they score against the
-    * registry copy. First caller pays the 20 GD jobs;
-    * [[prebuildCaches]] pays it in Bench's untimed warmup. */
-  private[graft] def ensureClfWeights(s: SparkSession, d: String): String =
-    Store.materialize("clfw", "v1", d, "documents") { path =>
-      val (tf, n) = qualityClfTf(s, d)
-      val w = trainQualityClf(tf, n)
-      s.createDataFrame(
-          w.toSeq.zipWithIndex.map { case (v, b) => (b.toLong, v) })
-        .toDF("bucket", "wb")
-        .coalesce(1).write.mode("overwrite").parquet(path)
-    }
-
-  /** σ(z/T) quantized 1e-6 after evaluation, for a 1e9-quantized
-    * logit `zq` and a 1e-2-quantized temperature `tq` (T = tq/100) —
-    * the x39 transcendental rule applied to the calibrated score.
-    * zq/1e9, tq/100, and their quotient are each one correctly-
-    * rounded IEEE division on exact integers, so both engines feed
-    * exp() the identical double. */
-  private def sigmaT(zq: Column, tq: Column): Column =
-    round((lit(1.0) / (lit(1.0) + exp(-((zq.cast("double") / 1e9)
-      / (tq.cast("double") / lit(100.0)))))) * 1e6, 0).cast("long")
-
-  /** x36's hash bucket (16-bit md5 prefix mod 100) — the split
-    * arithmetic shared by every held-out consumer. */
-  private def splitBalde(id: Column): Column =
-    pmod(conv(substring(md5(id.cast("string")), 1, 4), 16, 10)
-      .cast("long"), lit(100L))
-
-  /** The full (tq, snll) temperature grid on x36's val split — the
-    * scan [[ensureClfTemp]] argmins over, exposed whole so EngineSpec
-    * can pin the floor (T = 1 is on the grid) without re-deriving
-    * the quantization chain. */
-  private[graft] def clfTempGrid(s: SparkSession, d: String): DataFrame = {
-    val wdf = s.read.parquet(ensureClfWeights(s, d))
-    val valDocs = Tables.documents(s, d)
-      .filter(splitBalde(col("doc_id")) >= 90 &&
-        splitBalde(col("doc_id")) < 95)
-    val grid = s.range(25, 401, 5).select(col("id").as("tq"))
-    val pc = least(greatest(sigmaT(col("zq"), col("tq")), lit(1L)),
-      lit(999999L))
-    clfLogits(clfFeatures(valDocs), wdf)
-      .crossJoin(broadcast(grid))
-      .withColumn("nq", round(-log(
-        when(col("y") === 1L, pc).otherwise(lit(1000000L) - pc)
-          .cast("double") / 1e6) * 1e6, 0).cast("long"))
-      .groupBy(col("tq")).agg(sum(col("nq")).as("snll"))
+    * so no timed pass conflates build cost with query cost (an
+    * earlier bench stamped x60 at 10.98 s vs a 0.90 s isolated
+    * timing). A store already built costs one stat call. */
+  def prebuildCaches(s: SparkSession, d: String): Unit = {
+    import TrainingDataAnn._, TrainingDataClassifier._, TrainingDataDedup._
+    Seq[(SparkSession, String) => String](
+      ensureIvfIndex, ensureSigStore, TrainingDataQuality.ensureCuratedStaged,
+      ensureDHashStore, ensureDedupLabels, ensureIvfPqStore,
+      ensureIvfBaseStore, ensureIvfPqBase,
+      ensurePlantedFixtures,
+      ensureOpqPqStore, ensureClfWeights,
+      ensureWinnowStore, ensureClfTemp,
+      ensureClfTrajectory).foreach(_(s, d))
   }
 
-  /** The persisted temperature for x108's classifier (x136): the
-    * 1-parameter post-hoc calibration (Guo et al. 2017) fitted on
-    * x36's VAL split by a quantized NLL grid scan — T ∈ {0.25 …
-    * 4.00} step 0.05, each candidate scored by the 1e-6-quantized
-    * negative log-likelihood of the 1e-6-quantized σ(z/T) (both
-    * transcendentals quantized after evaluation, so the scan is an
-    * integer argmin both engines replay bit-for-bit; ties take the
-    * smaller T). T = 1 sits on the grid, so the fitted NLL can never
-    * exceed the uncalibrated one — the acceptance floor EngineSpec
-    * pins. Stored beside the weight registry ([[ensureClfWeights]])
-    * because serving needs BOTH numbers: production scores with
-    * σ(z/T*), never refits per query. Scale: one val-split scoring
-    * scan × a 76-row broadcast grid collapsing onto 76 rows — the
-    * x111 bounded-grid shape. First caller pays; [[prebuildCaches]]
-    * pays it in Bench's untimed warmup. */
-  private[graft] def ensureClfTemp(s: SparkSession, d: String): String =
-    Store.materialize("clft", "v1", d, "documents") { path =>
-      clfTempGrid(s, d)
-        .orderBy(col("snll"), col("tq")).limit(1)
-        .coalesce(1).write.mode("overwrite").parquet(path)
-    }
-
-  /** The OPQ-rotated serving store (x114): [[graft.ml.Opq]]'s
-    * parametric rotation applied to the corpus, then EXACTLY the
-    * [[writeIvfPq]] pipeline on the rotated vectors — coarse
-    * 16-cell L2 quantizer, residual 8×16 product codebook, codes and
-    * cell map — plus the rotation matrix itself (serving must rotate
-    * incoming queries with the SAME matrix the corpus was coded
-    * under). This is the composition Ge et al. describe as the
-    * production layout: OPQ is a drop-in pre-rotation for IVF-PQ. */
-  private[graft] def ensureOpqPqStore(s: SparkSession, d: String): String =
-    Store.materialize("opqpq", "v1", d, "embeddings") { path =>
-      val (mat, _, _) = graft.ml.Opq.covariance(Tables.embeddings(s, d))
-      val rows = graft.ml.Opq.rotationRows(
-        graft.ml.Opq.eigensolve(mat, mat.length), m = 8, dsub = 8)
-      s.createDataFrame(rows.toSeq.zipWithIndex.map { case (u, o) =>
-          (o.toLong + 1L, u.toSeq) })
-        .toDF("o", "u")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/rot")
-      writeIvfPq(spread(s, Tables.embeddings(s, d))
-          .select(col("vec_id"),
-            graft.ml.Opq.rotateCol(col("embedding"), rows).as("embedding"))
-          .localCheckpoint(), path)
-        .write.mode("overwrite").parquet(s"$path/cells")
-    }
-
   /** Stage the synthetic failure-mode fixtures that rounds ≤8 planted
-    * INLINE in three carriers (the round-8 verdict's cleanup note):
-    * the driver's testdata is read-only, so the "fixture generator"
+    * INLINE in three carriers:
+    * the testdata is read-only, so the "fixture generator"
     * is this derived-parquet staging — x93's corpus with a repeated
     * leading segment every third doc, x97's training corpus with
     * re-cased eval copies, and x104's paired-vector id table with a
@@ -701,236 +166,24 @@ object TrainingData {
         .write.mode("overwrite").parquet(s"$path/docs_paginated")
     }
 
-  /** The PRE-BATCH serving index for x109's incremental-maintenance
-    * audit: an IVF index trained and built on the base corpus only
-    * (vec_id % 10 ≠ 7 — the batch vectors provably never influenced
-    * the quantizer), persisted like [[ensureIvfIndex]]. */
-  private def ensureIvfBaseStore(s: SparkSession, d: String): String =
-    Store.materialize("ivf_base", "v1c16i2", d, "embeddings") { path =>
-      graft.ml.IvfIndex.save(
-        graft.ml.IvfIndex.build(
-          spread(s, Tables.embeddings(s, d).filter(col("vec_id") % 10 =!= 7)),
-          nCells = 16, lloydIters = 2),
-        path)
-    }
-
-  /** Build-and-save the x13-shaped IVF index once per fixture (first
-    * caller pays; everyone after — x31's probes, x35's cells — reads
-    * the materialized inverted file from disk). Returns the path. */
-  private def ensureIvfIndex(s: SparkSession, d: String): String = {
-    val nCells = 16; val lloydIters = 2
-    Store.materialize("ivf_index", s"v1c${nCells}i$lloydIters", d,
-        "embeddings") { path =>
-      graft.ml.IvfIndex.save(
-        graft.ml.IvfIndex.build(
-          spread(s, Tables.embeddings(s, d)), nCells = nCells, lloydIters),
-        path)
-    }
-  }
-
-  /** X31: the persisted-IVF QUERY path — the production side of the
-    * build-once/query-many split that the fused x13 (train + probe,
-    * timed together every run) can't show. The first call per sf-dir
-    * builds and [[graft.ml.IvfIndex.save]]s the on-disk inverted file
-    * (cells partitioned by `cell`); every later call — including every
-    * timed bench pass, since the warm pass pays the build — only loads
-    * it and probes, opening none but the probed cells' files via
-    * dynamic partition pruning (plan-asserted in MlSpec). Same
-    * determinism contract as x13 (shared [[ivfOracle]]); queries are
-    * vec_id 5..9 so the two entries' results stay distinguishable. */
-  val x31IvfQuery: Q = (s, d) =>
-    graft.ml.IvfIndex.query(
-      graft.ml.IvfIndex.loadCached(s, ensureIvfIndex(s, d)),
-      Tables.embeddings(s, d).filter(col("vec_id") >= 5 && col("vec_id") < 10),
-      nprobe = 4, topK = 10)
-      .orderBy(col("qid"), col("rk"))
-
-  /** X19: Gopher-style repetition quality signal — the share of all
-    * word 2-grams taken by the single most frequent 2-gram (Rae et
-    * al.'s repetition filters). Two partial-aggregating shuffles:
-    * (doc, gram) counts then per-doc max/sum; at 100 TB both are
-    * map-side combinable and nothing materializes the gram lists past
-    * the first exchange. Docs with <2 tokens have no 2-grams and drop
-    * out (documented inner semantics). */
-  val x19GopherRepetition: Q = (s, d) => {
-    val grams = Tables.documents(s, d)
-      .select(col("doc_id"), wsTokens(col("text")).as("toks"))
-      .select(col("doc_id"), explode(allShinglesOfToks(col("toks"), 2)).as("g"))
-    grams.groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("c")).as("total_2grams"), max(col("c")).as("top_2gram_n"))
-      .withColumn("rep_ratio",
-        col("top_2gram_n").cast("double") / col("total_2grams"))
-      .withColumn("repetitive", col("rep_ratio") > 0.05)
-      .orderBy(col("doc_id"))
-  }
-
-  /** X41: the second Gopher repetition filter (Rae et al. publish a
-    * SUITE: x19 carries "top n-gram share", this carries "fraction of
-    * tokens in duplicate n-grams" — a doc can pass one and fail the
-    * other, e.g. many distinct phrases each repeated twice). Per doc:
-    * the share of all 3-gram slots taken by 3-grams occurring ≥2×
-    * WITHIN that doc. Same two map-side-combinable shuffles as x19
-    * ((doc, gram) counts → per-doc sums); nothing global, nothing
-    * beyond the doc's own gram table. Docs with <3 tokens have no
-    * 3-gram and drop out (inner semantics, like x19). */
-  val x41GopherDupNgrams: Q = (s, d) => {
-    val grams = Tables.documents(s, d)
-      .select(col("doc_id"), wsTokens(col("text")).as("toks"))
-      .select(col("doc_id"), explode(allShinglesOfToks(col("toks"), 3)).as("g"))
-    grams.groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("c")).as("total_3grams"),
-        sum(when(col("c") >= 2, col("c")).otherwise(lit(0))).as("dup_3gram_n"))
-      .withColumn("dup_ratio",
-        col("dup_3gram_n").cast("double") / col("total_3grams"))
-      .withColumn("repetitive", col("dup_ratio") > 0.3)
-      .orderBy(col("doc_id"))
-  }
-
-  /** X20: benchmark decontamination — flag training docs sharing any
-    * distinct word 3-gram with the eval set (doc_id < 50 here; a real
-    * pipeline swaps in the benchmark corpus). The eval side is tiny by
-    * construction, so the gram join is an explicit broadcast: the 100
-    * TB training corpus streams map-side against the broadcast gram
-    * set — no shuffle of the corpus at all until the per-doc count
-    * aggregation of the (rare) matches. */
-  val x20Decontaminate: Q = (s, d) => {
-    val docs = Tables.documents(s, d)
-    val evalGrams = docs.filter(col("doc_id") < 50)
-      .select(col("doc_id").as("eval_id"), wsTokens(col("text")).as("toks"))
-      .select(col("eval_id"), explode(shinglesOfToks(col("toks"), 3)).as("g"))
-    val trainGrams = docs.filter(col("doc_id") >= 50)
-      .select(col("doc_id"), wsTokens(col("text")).as("toks"))
-      .select(col("doc_id"), explode(shinglesOfToks(col("toks"), 3)).as("g"))
-    trainGrams.join(broadcast(evalGrams), Seq("g"))
-      .groupBy(col("doc_id"))
-      .agg(countDistinct(col("g")).as("n_overlap_grams"),
-        countDistinct(col("eval_id")).as("n_eval_docs"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** X97: CANONICALIZED decontamination — x20 with the normalization
-    * step real pipelines apply before n-gram overlap (GPT-3's
-    * decontamination lowercases and strips punctuation; raw-token
-    * overlap misses an eval item that was re-cased or re-punctuated
-    * in the crawl): tokens are lowercased, stripped to [A-Za-z0-9],
-    * empties dropped, THEN shingled — at SIX grams, not x20's three:
-    * canonicalization collapses surface variants and inflates the
-    * document frequency of short grams, and the overlap join's
-    * intermediate is Σ_g df_train(g)·df_eval(g) — measured 48 s at
-    * sf0.1 with canonical 3-grams vs sub-second at 6 (which is WHY
-    * GPT-3-class pipelines decontaminate on 8-13-grams: long grams
-    * are the blowup control, not just a precision knob). The fixture
-    * plants the failure mode — uppercased+re-punctuated copies of
-    * the eval docs (+6M ids) in the train side — which this catches
-    * and x20's raw grams cannot. Same broadcast-eval join shape as
-    * x20 (the eval set is always the small side at any corpus
-    * scale). */
-  val x97CanonDecontaminate: Q = (s, d) => {
-    val docs = Tables.documents(s, d)
-    def canon(c: Column) = filter(
-      transform(wsTokens(c),
-        t => lower(regexp_replace(t, "[^A-Za-z0-9]", ""))),
-      t => length(t) > 0)
-    val evalGrams = docs.filter(col("doc_id") < 50)
-      .select(col("doc_id").as("eval_id"), canon(col("text")).as("ctoks"))
-      .select(col("eval_id"), explode(shinglesOfToks(col("ctoks"), 6)).as("g"))
-    // the training corpus (with its re-cased eval copies) is the
-    // STAGED derived fixture — see [[ensurePlantedFixtures]]; the
-    // oracle recomputes it from the base table
-    val train = s.read.parquet(
-      s"${ensurePlantedFixtures(s, d)}/docs_canon_train")
-    val trainGrams = train
-      .select(col("doc_id"), canon(col("text")).as("ctoks"))
-      .select(col("doc_id"), explode(shinglesOfToks(col("ctoks"), 6)).as("g"))
-    trainGrams.join(broadcast(evalGrams), Seq("g"))
-      .groupBy(col("doc_id"))
-      .agg(countDistinct(col("g")).as("n_overlap_grams"),
-        countDistinct(col("eval_id")).as("n_eval_docs"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** X21: corpus-curation funnel — the end-to-end shape of a training
-    * -data preprocessing job (language filter → quality threshold →
-    * exact dedup → hash-rank sample) reported as per-stage audit
-    * counts, the reference's §5 audit discipline (row deltas after
-    * every filter) applied to the LLM pipeline. The whole funnel is
-    * ONE pass: per-row stage flags, then a single aggregate
-    * (conditional counts + a distinct-fingerprint count), unpivoted to
-    * the stage rows — not a union of five aggregates, which would scan
-    * the 100 TB corpus five times. The sample-stage count is
-    * `least(5, dedup)` by construction (hash-rank top-5, x16). */
-  val x21CurationFunnel: Q = (s, d) => {
-    val docs = Tables.documents(s, d)
-    val corpus = corpusWithDupes(s, d)
-    val q = qualityScore(col("text"), stopwords)
-    val flags = corpus.join(
-        broadcast(docs.select(col("doc_id").as("base_id"), col("lang"))),
-        corpus("doc_id") % 1000000L === col("base_id"))
-      .select(
-        (col("lang") === "en").as("f_lang"),
-        (col("lang") === "en" && q >= 0.5).as("f_qual"),
-        when(col("lang") === "en" && q >= 0.5, fingerprint(col("text")))
-          .as("fp_kept"))
-    flags.agg(
-        count(lit(1)).as("bruto"),
-        count(when(col("f_lang"), 1)).as("idioma"),
-        count(when(col("f_qual"), 1)).as("qualidade"),
-        countDistinct(col("fp_kept")).as("dedup_exato"))
-      .withColumn("amostra", least(col("dedup_exato"), lit(5L)))
-      .selectExpr("""stack(5,
-        1, 'bruto', bruto,
-        2, 'idioma', idioma,
-        3, 'qualidade', qualidade,
-        4, 'dedup_exato', dedup_exato,
-        5, 'amostra', amostra) AS (ordem, etapa, linhas)""")
-      .orderBy(col("ordem"))
-  }
-
-  /** X37: per-source curation funnel — x21's audit accounting broken
-    * down by origin domain, the report mixture decisions actually
-    * consume (which source loses how much at which gate feeds the
-    * x27 budget recipe). Same single-pass discipline: ONE scan
-    * computes every stage flag, one groupBy(source) aggregates the
-    * conditional counts + per-source distinct fingerprints — never a
-    * rescan per stage. */
-  val x37FunnelBySource: Q = (s, d) => {
-    val docs = Tables.documents(s, d)
-    val corpus = corpusWithDupes(s, d)
-    val q = qualityScore(col("text"), stopwords)
-    val flags = corpus.join(
-        broadcast(docs.select(col("doc_id").as("base_id"), col("lang"),
-          col("source"))),
-        corpus("doc_id") % 1000000L === col("base_id"))
-      .select(col("source"),
-        (col("lang") === "en").as("f_lang"),
-        (col("lang") === "en" && q >= 0.5).as("f_qual"),
-        when(col("lang") === "en" && q >= 0.5, fingerprint(col("text")))
-          .as("fp_kept"))
-    flags.groupBy(col("source")).agg(
-        count(lit(1)).as("bruto"),
-        count(when(col("f_lang"), 1)).as("idioma"),
-        count(when(col("f_qual"), 1)).as("qualidade"),
-        countDistinct(col("fp_kept")).as("dedup_exato"))
-      .orderBy(col("source"))
-  }
-
-  /** X22: incremental (batch-over-corpus) dedup — drop incoming docs
-    * whose fingerprint already exists in the corpus, keep the rest.
-    * The ingestion-time counterpart of x1: a LEFT ANTI join on the
-    * fingerprint, shuffling only (fp, id) pairs. The corpus side is
-    * NOT broadcast on purpose — at 100 TB the fingerprint store is
-    * corpus-sized (a bucketed table by fp makes the anti join
-    * shuffle-free); the incoming batch is the small side. */
-  val x22IncrementalDedup: Q = (s, d) => {
-    val corpus = corpusWithDupes(s, d)
-    graft.streaming.DocStream.incrementalDedup(
-      corpus.filter(col("doc_id") >= 1000000L),
-      corpus.filter(col("doc_id") < 1000000L))
-      .select(col("doc_id"), col("fp"))
-      .orderBy(col("doc_id"))
-  }
+  /** x66/x87/x112's segments: each doc behind its source's portal
+    * boilerplate, cut into consecutive 8-token segments
+    * (doc_id, g, segtxt, fp = md5(segtxt)). */
+  private[queries] def boilerSegments(docs: DataFrame): DataFrame =
+    docs
+      .select(col("doc_id"),
+        wsTokens(concat(lit("portal "), col("source"),
+          lit(" official mirror terms of service apply"
+            + " all rights reserved contact webmaster "),
+          col("text"))).as("toks"))
+      .select(col("doc_id"), col("toks"),
+        explode(sequence(lit(0L),
+          call_function("div", size(col("toks")).cast("long") + 7L, lit(8L))
+            - 1)).as("g"))
+      .select(col("doc_id"), col("g"),
+        array_join(slice(col("toks"), (col("g") * 8 + 1).cast("int"),
+          lit(8)), " ").as("segtxt"))
+      .withColumn("fp", md5(col("segtxt")))
 
   /** Deterministic hash sub-shard in [0, n): the first 16 bits of
     * md5(doc_id), reproducible bit-for-bit in DuckDB as
@@ -938,615 +191,15 @@ object TrainingData {
     * This is the skew splitter for the packing/mixture windows: a
     * skewed source (one web crawl = most of the corpus) spreads over
     * `n` independent window partitions instead of one task's sort. */
-  private def subShard(n: Int): Column =
-    pmod(conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
-      .cast("long"), lit(n.toLong)).cast("int")
+  private[queries] def subShard(n: Int): Column =
+    splitBalde(col("doc_id"), n).cast("int")
 
-  /** Sequence-packing core over (doc_id, source, n_tok) rows — the
-    * concat-and-chunk step every LLM training pipeline runs after
-    * curation (documents concatenated in a stable order, split at
-    * fixed `b`-token boundaries into training sequences). Packing is
-    * per (source, sub_shard): each source splits into `subShards`
-    * hash sub-shards ([[subShard]]) with INDEPENDENT sequence spaces,
-    * a window cumsum gives each doc its token offset within its
-    * sub-shard, docs spanning a boundary land in every sequence they
-    * overlap, and the report aggregates per (source, sub_shard,
-    * sequence). 100 TB design: packing order is only ever needed
-    * within a shard (production packs per input file/partition), so
-    * there is no global order and no single-partition window — and a
-    * skewed source is bounded by its sub-shard size, not its own: set
-    * `subShards ≈ source_tokens / tokens_per_task` for the hot
-    * source. Zero-token docs are dropped (they span no sequence and
-    * would otherwise emit spurious boundary rows). Reusable on any
-    * tokenized corpus (x25 and the packing property test share it). */
-  private[graft] def packSequences(rows: DataFrame, b: Int,
-      subShards: Int = 1): DataFrame =
-    packSegments(rows, b, subShards)
-      .groupBy(col("source"), col("sub_shard"), col("seq_id"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("toks_na_seq")).as("n_tokens"),
-        min(col("doc_id")).as("first_doc"),
-        max(col("doc_id")).as("last_doc"))
-      .orderBy(col("source"), col("sub_shard"), col("seq_id"))
+  /** x36's hash bucket (16-bit md5 prefix mod `n`, 100 by default) —
+    * the split arithmetic shared by every held-out consumer. */
+  private[queries] def splitBalde(id: Column, n: Long = 100L): Column =
+    pmod(conv(substring(md5(id.cast("string")), 1, 4), 16, 10)
+      .cast("long"), lit(n))
 
-  /** The exploded (doc-segment × sequence) rows under [[packSequences]]'s
-    * contract — each row is the slice of one document landing in one
-    * `b`-token training sequence, with its in-sequence token length
-    * (`toks_na_seq`). x25 aggregates these into the packing report;
-    * x121 audits their boundary structure. Shared so the packer and
-    * its audit cannot drift. */
-  private[graft] def packSegments(rows: DataFrame, b: Int,
-      subShards: Int = 1): DataFrame = {
-    require(b > 0, s"sequence budget must be positive, got $b")
-    require(subShards > 0, s"sub-shard count must be positive, got $subShards")
-    val w = Window.partitionBy(col("source"), col("sub_shard"))
-      .orderBy(col("doc_id"))
-    rows
-      .filter(col("n_tok") > 0)
-      .withColumn("sub_shard", subShard(subShards))
-      .withColumn("ini", sum(col("n_tok")).over(w) - col("n_tok"))
-      .select(col("source"), col("sub_shard"), col("doc_id"), col("ini"),
-        col("n_tok"),
-        explode(sequence(floor(col("ini") / b),
-          floor((col("ini") + col("n_tok") - 1) / b))).as("seq_id"))
-      .withColumn("toks_na_seq",
-        least(col("ini") + col("n_tok"), (col("seq_id") + 1) * b)
-          - greatest(col("ini"), col("seq_id") * b))
-  }
-
-  /** X121: pack boundary / attention-contamination audit — the cost
-    * report for training WITHOUT document-masked attention on x25's
-    * concat-and-chunk packs: when documents are concatenated and
-    * split at fixed boundaries, a fraction of every sequence's
-    * attention pairs crosses a document boundary (tokens attending
-    * into an unrelated neighbor). Per sequence that fraction is
-    * closed-form from the segment lengths alone — (L² − Σᵢlᵢ²)/L²
-    * over ordered pairs — so the audit needs NO token materialization:
-    * per source it reports sequences, doc-segments, max/mean docs per
-    * sequence, and the corpus-level cross-document attention fraction
-    * (the number that decides whether the trainer must pay for
-    * block-diagonal attention masks). Shares [[packSegments]] with
-    * x25 (packer and audit cannot drift); everything after the
-    * segment explode is two map-side-combinable integer aggregations
-    * onto |sources|×shards then |sources| rows. All ratios pure-BIGINT
-    * [[intRoundHalfAway]]. */
-  val x121PackBoundaryAudit: Q = (s, d) =>
-    packSegments(
-      Tables.documents(s, d).select(col("doc_id"), col("source"),
-        tokenCount(col("text")).cast("long").as("n_tok")),
-      b = 256, subShards = 4)
-      .groupBy(col("source"), col("sub_shard"), col("seq_id"))
-      .agg(count(lit(1)).as("nd"), sum(col("toks_na_seq")).as("l"),
-        sum(col("toks_na_seq") * col("toks_na_seq")).as("s2"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_seqs"), sum(col("nd")).as("n_segments"),
-        max(col("nd")).as("max_docs_seq"),
-        sum(col("l") * col("l") - col("s2")).as("cross"),
-        sum(col("l") * col("l")).as("tot"))
-      .select(col("source"), col("n_seqs"), col("n_segments"),
-        col("max_docs_seq"),
-        (intRoundHalfAway(col("n_segments") * 10000L, col("n_seqs"))
-          .cast("double") / 1e4).as("mean_docs_seq"),
-        (intRoundHalfAway(col("cross") * 10000L, col("tot"))
-          .cast("double") / 1e4).as("cross_frac"))
-      .orderBy(col("source"))
-
-  val x25PackSequences: Q = (s, d) =>
-    packSequences(
-      Tables.documents(s, d).select(col("doc_id"), col("source"),
-        tokenCount(col("text")).cast("long").as("n_tok")),
-      b = 256, subShards = 4)
-
-  private val emailRe = emailPattern
-  private val phoneRe = phonePattern
-
-  /** The corpus with deterministic synthetic PII appended (the fixture
-    * text has none): every 7th doc gains an email, every 11th a
-    * BR-format phone — both derived from doc_id so the DuckDB oracle
-    * rebuilds the identical corpus. */
-  private def piiCorpus(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d).select(col("doc_id"), concat(col("text"),
-      when(col("doc_id") % 7 === 0,
-        concat(lit(" contato: user"), col("doc_id"), lit("@example.com")))
-        .otherwise(lit("")),
-      when(col("doc_id") % 11 === 0,
-        concat(lit(" fone: (11) 99999-"),
-          lpad((col("doc_id") % 10000).cast("string"), 4, "0")))
-        .otherwise(lit(""))).as("text"))
-
-  /** X26: PII redaction — scan-speed regex scrub (emails, phones)
-    * with per-doc match counts, the pre-training privacy pass. Pure
-    * codegen'd Column expressions (regexp_count/regexp_replace), no
-    * shuffle, no UDF: at 100 TB this runs at parquet-scan speed and
-    * the regexes are RE2-compatible (no backtracking blowup on
-    * adversarial text). Both engines replay the same injected corpus
-    * ([[piiCorpus]]), so the hash compare proves redaction equality,
-    * not just counts. */
-  val x26PiiRedaction: Q = (s, d) =>
-    piiCorpus(s, d)
-      .select(col("doc_id"),
-        regexp_count(col("text"), lit(emailRe)).cast("int").as("n_emails"),
-        regexp_count(col("text"), lit(phoneRe)).cast("int").as("n_phones"),
-        md5(redactPii(col("text"))).as("fp_redigido"))
-      .orderBy(col("doc_id"))
-
-  /** Test probe: docs whose REDACTED text still matches a PII regex —
-    * redaction must be a fixpoint (EngineSpec). */
-  private[graft] def piiFixpointProbe(s: SparkSession, d: String): Long =
-    piiCorpus(s, d)
-      .select(redactPii(col("text")).as("t"))
-      .filter(regexp_count(col("t"), lit(emailRe)) > 0 ||
-        regexp_count(col("t"), lit(phoneRe)) > 0)
-      .count()
-
-  /** Domain-mixture core over (doc_id, source, n_tok, amostra_chave)
-    * rows: resize each source/domain to a target token budget by
-    * taking docs in hash (`amostra_chave`) order until the budget is
-    * crossed (greedy prefix, boundary doc kept). Each source splits
-    * into `subShards` hash sub-shards ([[subShard]]) and the source
-    * budget is PRO-RATED by the sub-shard's token share
-    * (`cota = budget * shard_tok div source_tok`, integer arithmetic
-    * so both engines agree exactly); each sub-shard then runs its own
-    * greedy prefix against its own quota. A skewed domain is thus
-    * bounded by its sub-shard, never a single task's sort, and the
-    * total taken stays within a boundary-doc-per-shard of the source
-    * budget. The quota table is mixture-key-sized → broadcast. */
-  private[graft] def domainMixture(rows: DataFrame, budget: Long,
-      subShards: Int): DataFrame = {
-    require(budget > 0, s"token budget must be positive, got $budget")
-    require(subShards > 0, s"sub-shard count must be positive, got $subShards")
-    val base = rows.withColumn("sub_shard", subShard(subShards))
-    val quota = base.groupBy(col("source"), col("sub_shard"))
-      .agg(sum(col("n_tok")).as("shard_tok"))
-      .withColumn("source_tok",
-        sum(col("shard_tok")).over(Window.partitionBy(col("source"))))
-      .select(col("source"), col("sub_shard"),
-        expr(s"$budget * shard_tok div source_tok").as("cota"))
-    val w = Window.partitionBy(col("source"), col("sub_shard"))
-      .orderBy(col("amostra_chave"))
-    base
-      .withColumn("tok_antes", sum(col("n_tok")).over(w) - col("n_tok"))
-      .join(broadcast(quota), Seq("source", "sub_shard"))
-      .filter(col("tok_antes") < col("cota"))
-      .select(col("source"), col("sub_shard"), col("doc_id"), col("n_tok"),
-        col("tok_antes"), col("cota"))
-      .orderBy(col("source"), col("doc_id"))
-  }
-
-  /** X27: domain-mixture sampling — the training-mix step (domain
-    * reweighting to a token recipe) on [[domainMixture]]. Deterministic
-    * and mergeable like x16: the hash order is global, no RNG state.
-    * One shuffle on the mixture key, sub-sharded 4 ways with pro-rated
-    * per-shard budgets (the skew path, exercised by default). */
-  val x27DomainMixture: Q = (s, d) =>
-    domainMixture(
-      Tables.documents(s, d)
-        .select(col("doc_id"), col("source"),
-          tokenCount(col("text")).cast("long").as("n_tok"),
-          md5(col("doc_id").cast("string")).as("amostra_chave")),
-      budget = 500L, subShards = 4)
-
-  /** X28: per-label embedding centroids (mean pooling) — prototype
-    * vectors / class centroids over an embedding column. Element-wise
-    * mean via posexplode + the integer 2^24-scale sum (the exact
-    * order-free trick shared with [[graft.ml.IvfIndex.lloydStep]]),
-    * emitted as (label, pos, comp) scalars. Both shuffles are
-    * map-side combinable; nothing materializes per-label vector
-    * lists. */
-  val x28LabelCentroids: Q = (s, d) =>
-    Tables.embeddings(s, d)
-      .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy(col("label"), col("pos"))
-      .agg(sum(floor(col("v").cast("double") * (1 << 24))).as("sv"),
-        count(lit(1)).as("n"))
-      .select(col("label"), col("pos"),
-        (col("sv").cast("double") / (col("n").cast("double") * (1 << 24)))
-          .as("comp"),
-        col("n"))
-      .orderBy(col("label"), col("pos"))
-
-  /** X29: Bloom-prefiltered incremental dedup — the 100 TB shape of
-    * x22. A Bloom filter over the corpus fingerprints (built with the
-    * engine's order-independent `bloom_filter_agg`, broadcast to the
-    * scan) splits the incoming batch map-side: bloom-NEGATIVE docs are
-    * definitely new (no false negatives) and skip the join entirely;
-    * only bloom-POSITIVE candidates — a tiny fraction at scale — pay
-    * the exact anti-join that removes false positives. The output is
-    * therefore bit-identical to the exact x22 result (asserted in
-    * EngineSpec and by sharing its DuckDB oracle), while the shuffled
-    * volume drops from the whole batch to the candidate sliver. */
-  val x29BloomDedup: Q = (s, d) => {
-    val corpus = corpusWithDupes(s, d)
-    val existing = corpus.filter(col("doc_id") < 1000000L)
-      .select(fingerprint(col("text")).as("fp")).distinct()
-    val incoming = corpus.filter(col("doc_id") >= 1000000L)
-      .select(col("doc_id"), fingerprint(col("text")).as("fp"))
-    // The sketch rides a SCALAR SUBQUERY (the same shape Spark's own
-    // InjectRuntimeFilter feeds might_contain, and the form its type
-    // check admits besides a constant): the whole query stays ONE
-    // lazy plan — building the DataFrame runs no job, and the
-    // fixed-size aggregate executes as a subquery stage of the same
-    // query. Sized above the largest fixture corpus (50k fps at the
-    // 10× scale smoke): an undersized bloom only degrades pruning
-    // (more candidates reach the exact join), never correctness —
-    // size to the corpus cardinality estimate in production.
-    val bf = org.apache.spark.sql.GraftBridge.scalarSubquery(
-      existing.agg(graft.functions.SketchFunctions
-        .bloomFilterAgg(col("fp"), 60000L, 480000L).as("bf")))
-    val flagged = incoming
-      .withColumn("candidato",
-        graft.functions.SketchFunctions.mightContain(bf, col("fp")))
-      .select(col("doc_id"), col("fp"), col("candidato"))
-    val definitelyNew = flagged.filter(!col("candidato"))
-      .select(col("doc_id"), col("fp"))
-    val verified = flagged.filter(col("candidato"))
-      .join(existing, Seq("fp"), "left_anti")
-      .select(col("doc_id"), col("fp"))
-    definitelyNew.unionByName(verified).orderBy(col("doc_id"))
-  }
-
-  /** X30: TF-IDF keyword extraction — top-3 tokens per document by
-    * tf·idf (idf = ln((N+1)/(df+1)), scores 4dp-rounded for stable
-    * cross-engine ranking, token tie-break). Corpus-wide df rides ONE
-    * map-side-combinable (token → doc-count) aggregate whose output is
-    * vocabulary-sized; tf is per-doc local. No broadcast hint on the
-    * df join: a 100 TB corpus's vocabulary can exceed broadcast
-    * limits, so AQE picks the strategy (it broadcasts at fixture
-    * scale anyway — plan-asserted in PlansSpec). Nothing shuffles the
-    * corpus twice at scale. */
-  val x30TfidfTopk: Q = (s, d) => {
-    val docs = Tables.documents(s, d)
-    // corpus size as a 1-row broadcast (the A10 scalar pattern), not a
-    // driver-side count — the whole query stays one lazy plan
-    val nDocs = docs.agg(count(lit(1)).as("n_corpus"))
-    val tf = docs
-      .select(col("doc_id"), explode(wsTokens(col("text"))).as("token"))
-      .groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("tf"))
-    // tf is already one row per (doc_id, token): a plain count is the
-    // same number as count-distinct without the distinct-expand
-    val df = tf.groupBy(col("token"))
-      .agg(count(lit(1)).as("df"))
-    val w = Window.partitionBy(col("doc_id"))
-      .orderBy(col("score").desc, col("token"))
-    tf.join(df, Seq("token"))
-      .crossJoin(broadcast(nDocs))
-      .withColumn("score", round(col("tf") *
-        log((col("n_corpus") + 1.0) / (col("df") + lit(1.0))), 4))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 3)
-      .select(col("doc_id"), col("token"), col("tf"), col("df"),
-        col("score"), col("rk"))
-      .orderBy(col("doc_id"), col("rk"))
-  }
-
-  /** X32: per-source quality calibration — normalize the quality gate
-    * ACROSS domains by keeping each source's top docs relative to its
-    * OWN quality distribution (a fixed global threshold over-prunes
-    * noisy domains and under-prunes clean ones; recipe-style curation
-    * calibrates per source). The per-source 60th-percentile cut is
-    * computed on a HISTOGRAM of the 4dp-rounded quality — bounded
-    * cardinality by construction (≤ 10⁴ buckets/source), so the
-    * corpus shuffles only map-side-combinable (source, quality)
-    * counts, the cumulative window runs over the tiny histogram, and
-    * the threshold table is mixture-key-sized → broadcast back. The
-    * corpus itself is never windowed; it IS scanned twice (histogram
-    * pass + filter pass — inherent to compute-threshold-then-apply;
-    * at 100 TB quality is staged as an ingest column and the
-    * calibration pass prices histogram-only). Keep rule: quality strictly
-    * above the nearest-rank cut (engine-exact: the cut is an observed
-    * 4dp value, no interpolation). */
-  val x32QualityCalibration: Q = (s, d) => {
-    val scored = Tables.documents(s, d)
-      .select(col("doc_id"), col("source"),
-        qualityScore(col("text"), stopwords).as("quality"))
-    val hist = scored.groupBy(col("source"), col("quality"))
-      .agg(count(lit(1)).as("c"))
-    val corte = hist
-      .withColumn("cum", sum(col("c")).over(
-        Window.partitionBy(col("source")).orderBy(col("quality"))))
-      .withColumn("n", sum(col("c")).over(Window.partitionBy(col("source"))))
-      .filter(col("cum") >= ceil(col("n") * 0.6))
-      .groupBy(col("source")).agg(min(col("quality")).as("corte"))
-    scored.join(broadcast(corte), Seq("source"))
-      .filter(col("quality") > col("corte"))
-      .select(col("source"), col("doc_id"), col("quality"), col("corte"))
-      .orderBy(col("source"), col("doc_id"))
-  }
-
-  /** Materialize the ingest-staged corpus once per sf-dir: the
-    * [[graft.streaming.DocStream.curate]] output (redacted text,
-    * n_tok, quality — the stream/batch-identical curation pass)
-    * persisted to parquet, quality carried as a COLUMN. This is the
-    * producer side of x32b's single-pass calibration: at 100 TB the
-    * quality score is computed once at ingest, not re-derived from
-    * text by every downstream consumer. minQuality=0 keeps every doc
-    * (calibration wants the full distribution; the threshold comes
-    * AFTER calibration). */
-  private def ensureCuratedStaged(s: SparkSession, d: String): String =
-    Store.materialize("curated_staged", "v1", d, "documents") { path =>
-      graft.streaming.DocStream.curate(
-        Tables.documents(s, d), minQuality = 0.0, stopwords)
-        .write.mode("overwrite").parquet(path)
-    }
-
-  /** X32b: the single-corpus-scan variant of [[x32QualityCalibration]]
-    * — the documented 100 TB path made real. Quality is read from the
-    * ingest-staged table ([[ensureCuratedStaged]]), never recomputed:
-    * the calibration pass prices HISTOGRAM-ONLY (a (source, quality)
-    * column-pruned scan — no text read, no regex work, bounded ≤10⁴
-    * buckets/source), and the filter pass is the one corpus scan,
-    * again without touching `text`. Same cut rule and output as x32,
-    * so the same oracle proves the staged column carries the exact
-    * score. Plan receipt (PLANS.md): both scans' ReadSchema exclude
-    * `text`; no qualityScore expression appears anywhere. */
-  val x32bQualityIngest: Q = (s, d) => {
-    val staged = s.read.parquet(ensureCuratedStaged(s, d))
-    val corte = staged
-      .groupBy(col("source"), col("quality")).agg(count(lit(1)).as("c"))
-      .withColumn("cum", sum(col("c")).over(
-        Window.partitionBy(col("source")).orderBy(col("quality"))))
-      .withColumn("n", sum(col("c")).over(Window.partitionBy(col("source"))))
-      .filter(col("cum") >= ceil(col("n") * 0.6))
-      .groupBy(col("source")).agg(min(col("quality")).as("corte"))
-    staged.join(broadcast(corte), Seq("source"))
-      .filter(col("quality") > col("corte"))
-      .select(col("source"), col("doc_id"), col("quality"), col("corte"))
-      .orderBy(col("source"), col("doc_id"))
-  }
-
-  /** X33: substring-level duplicate pairs on the dedup corpus
-    * ([[graft.dedup.NearDup.substringDupPairs]] — 64-char windows,
-    * 32-char stride, df ≤ 50 boilerplate guard). The synthetic exact
-    * and near copies guarantee shared windows, and the " extra"
-    * suffix of the near copy demonstrates what doc-level hashing
-    * can't: the pair still collides on every interior window. */
-  val x33SubstringDedup: Q = (s, d) =>
-    graft.dedup.NearDup.substringDupPairs(
-      spread(s, corpusWithDupes(s, d).filter(col("doc_id") % 1000000 < 200)))
-      .orderBy(col("id_a"), col("id_b"))
-
-  /** X34: metadata-filtered ANN — top-k cosine neighbors restricted
-    * to a catalog predicate (here `label = 0`; production: language,
-    * license, date-range). This is PRE-filtering (filter, then
-    * search): the predicate reaches the parquet scan as a pushed
-    * filter (plan-asserted in PlansSpec), so the search space prunes
-    * at I/O time — the right order whenever the filter is selective,
-    * vs post-filtering top-k which must over-fetch to survive the
-    * cut. Brute-force exact over the filtered catalog is the
-    * correctness baseline; the IVF path composes the same way
-    * (filter the cells relation before [[graft.ml.IvfIndex.query]]). */
-  val x34FilteredAnn: Q = (s, d) => {
-    val emb = Tables.embeddings(s, d)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val catalog = emb.filter(col("label") === 0)
-      .select(col("vec_id").as("nid"), col("embedding").as("ne"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("nid"))
-    catalog.crossJoin(broadcast(queries))
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("score", round(cosineSim(col("qe"), col("ne")), 4))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 10)
-      .select(col("qid"), col("nid"), col("score"), col("rk"))
-      .orderBy(col("qid"), col("rk"))
-  }
-
-  /** X35: semantic dedup (the SemDeDup recipe, Abbas et al. 2023):
-    * embedding-space near-duplicate removal bucketed by k-means
-    * cells — candidate pairs are scored only WITHIN each IVF cell
-    * (reusing the x13 Lloyd-trained quantizer), pairs at cosine ≥ τ
-    * chain into components via pointer-doubling CC, and the minimum
-    * vec_id survives per component. The quadratic term is bounded by
-    * the largest cell, never the corpus — that bucketing IS the
-    * method (cross-cell near-dups are SemDeDup's own documented
-    * recall trade-off, amortized by training the quantizer). τ = 0.4
-    * matches x12's verify threshold so the fixture produces real
-    * clusters. The cells come from the PERSISTED index
-    * ([[ensureIvfIndex]], shared with x31): the three references to
-    * the cell relation (both pair sides + the id universe) scan the
-    * materialized parquet instead of re-running the lazy assignment
-    * per reference — the build-once shape production uses. */
-  val x35SemanticDedup: Q = (s, d) => {
-    val cells = graft.ml.IvfIndex.loadCached(s, ensureIvfIndex(s, d)).cells
-    val pairs = cells
-      .select(col("cell"), col("vec_id").as("id_a"), col("embedding").as("ea"))
-      .join(cells.select(col("cell"), col("vec_id").as("id_b"),
-        col("embedding").as("eb")), Seq("cell"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(round(cosineSim(col("ea"), col("eb")), 4) >= 0.4)
-      .select(col("id_a"), col("id_b"))
-    graft.plans.ConnectedComponents.minLabel(
-      cells.select(col("vec_id").as("id")),
-      pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
-      .select(col("id").as("vec_id"), col("label").as("canonico"),
-        (col("id") === col("label")).as("sobrevivente"))
-      .orderBy(col("vec_id"))
-  }
-
-  /** X35b: cross-cell recall knob for [[x35SemanticDedup]] — each
-    * vector probes its TOP-2 nearest cells (nprobe=2, reusing the
-    * persisted index's centroid table and the 6dp+cid tie-break
-    * contract of [[graft.ml.IvfIndex.query]]), so a near-dup pair
-    * straddling a cell boundary — single-cell SemDeDup's documented
-    * miss — still becomes a candidate when either side's second
-    * choice is the other's cell. Cost model at 100 TB: every vector
-    * appears in ≤2 cells, so the candidate set is ≤4× the single-cell
-    * one and the quadratic term stays bounded by the largest cell;
-    * recall/cost measured on the fixture in PLANS.md. Pairs colliding
-    * in both shared cells dedup AFTER the τ-threshold (distinct on
-    * the id pair, never on the embeddings). */
-  val x35bSemdedupNprobe2: Q = (s, d) => {
-    val idx = graft.ml.IvfIndex.loadCached(s, ensureIvfIndex(s, d))
-    val wq = Window.partitionBy(col("vec_id")).orderBy(col("sim").desc, col("cid"))
-    val probed = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(idx.centroids))
-      .withColumn("sim", round(cosineSim(col("embedding"), col("ce")), 6))
-      .withColumn("rk", row_number().over(wq))
-      .filter(col("rk") <= 2)
-      .select(col("vec_id"), col("embedding"), col("cid").as("cell"))
-    val pairs = probed
-      .select(col("cell"), col("vec_id").as("id_a"), col("embedding").as("ea"))
-      .join(probed.select(col("cell"), col("vec_id").as("id_b"),
-        col("embedding").as("eb")), Seq("cell"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(round(cosineSim(col("ea"), col("eb")), 4) >= 0.4)
-      .select(col("id_a"), col("id_b")).distinct()
-    graft.plans.ConnectedComponents.minLabel(
-      idx.cells.select(col("vec_id").as("id")),
-      pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
-      .select(col("id").as("vec_id"), col("label").as("canonico"),
-        (col("id") === col("label")).as("sobrevivente"))
-      .orderBy(col("vec_id"))
-  }
-
-  /** X120: hard-negative mining — the contrastive-training data prep
-    * step (DPR/SimCSE style): for each anchor, the most-similar
-    * corpus vectors that are NOT the anchor's near-duplicates — close
-    * enough to be informative negatives, provably not positives. The
-    * exclusion is the anchor's whole x35 SemDeDup FAMILY (transitive
-    * closure of 4dp cosine ≥ 0.4 within-cell pairs), not a bare
-    * threshold cut: a chain-connected duplicate whose direct cosine
-    * to the anchor is below 0.4 is still a positive and still
-    * excluded — the case a threshold-only miner mislabels as a
-    * negative and poisons the loss with. Candidates are cell-bounded
-    * (persisted IVF index, the x35 cost contract); anchors are a
-    * deterministic sliver (vec_id % 100 = 3); ranking is 6dp cosine
-    * DESC with vec_id tie-break (the IvfIndex.query contract), top-3
-    * per anchor. The per-anchor window is sliver-sized, never
-    * corpus-sized. */
-  val x120HardNegatives: Q = (s, d) => {
-    val cells = graft.ml.IvfIndex.loadCached(s, ensureIvfIndex(s, d)).cells
-    val pairs = cells
-      .select(col("cell"), col("vec_id").as("id_a"), col("embedding").as("ea"))
-      .join(cells.select(col("cell"), col("vec_id").as("id_b"),
-        col("embedding").as("eb")), Seq("cell"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(round(cosineSim(col("ea"), col("eb")), 4) >= 0.4)
-      .select(col("id_a"), col("id_b"))
-    val lab = graft.plans.ConnectedComponents.minLabel(
-      cells.select(col("vec_id").as("id")),
-      pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
-      .select(col("id").as("vec_id"), col("label"))
-    val av = cells.join(lab, Seq("vec_id"))
-    val anchors = av.filter(col("vec_id") % 100 === 3)
-      .select(col("cell"), col("vec_id").as("anchor"),
-        col("embedding").as("ea"), col("label").as("la"))
-    val cands = av.select(col("cell"), col("vec_id").as("neg_id"),
-      col("embedding").as("eb"), col("label").as("lb"))
-    val wr = Window.partitionBy(col("anchor"))
-      .orderBy(col("cos").desc, col("neg_id"))
-    anchors.join(cands, Seq("cell"))
-      .filter(col("la") =!= col("lb"))
-      .withColumn("cos", round(cosineSim(col("ea"), col("eb")), 6))
-      .withColumn("rk", row_number().over(wr))
-      .filter(col("rk") <= 3)
-      .select(col("anchor"), col("rk").cast("long").as("rk"),
-        col("neg_id"), col("cos"))
-      .orderBy(col("anchor"), col("rk"))
-  }
-
-  /** X36: deterministic train/val/test split — hash-bucket assignment
-    * (16-bit md5 prefix mod 100: <90 train, <95 val, else test). A
-    * doc's split depends on nothing but its own id, which is the
-    * property that makes held-out sets trustworthy at 100 TB: stable
-    * across reruns, engines, partitionings, AND corpus growth (new
-    * docs never reshuffle old assignments, unlike row-number or
-    * sample() splits). Pure scan-speed Column expressions, zero
-    * shuffle before the presentation sort. */
-  val x36TrainSplit: Q = (s, d) => {
-    val balde = pmod(
-      conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long"), lit(100L))
-    Tables.documents(s, d)
-      .select(col("doc_id"), col("source"),
-        when(balde < 90, "train").when(balde < 95, "val")
-          .otherwise("test").as("split"),
-        balde.cast("int").as("balde"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** X119: SEMANTIC split leakage — the embedding-space twin of x71:
-    * x71 catches a val/test doc whose train-side near-duplicate
-    * shares n-gram shingles (lexical leakage); this catches one whose
-    * train-side neighbor is merely cosine-similar (paraphrased or
-    * re-generated copies that share no 5-gram and defeat every
-    * lexical decontaminator). Candidates are bounded by the PERSISTED
-    * IVF index's cells (the x35 SemDeDup contract: pairs form only
-    * within a cell, so cost scales with cell size, never corpus² —
-    * nprobe-style widening composes exactly as x35b). An eval-side
-    * vector with any train-side cell-mate at 4dp cosine ≥ 0.4 is
-    * leaked; per eval split: docs, leaked docs, leaking pairs, leak
-    * rate ([[intRoundHalfAway]], 4dp). Split arithmetic is x36's
-    * verbatim (16-bit md5 prefix mod 100), so the audit grades the
-    * very split the pipeline ships. */
-  val x119SemanticLeakage: Q = (s, d) => {
-    val cells = graft.ml.IvfIndex.loadCached(s, ensureIvfIndex(s, d)).cells
-    val balde = pmod(
-      conv(substring(md5(col("vec_id").cast("string")), 1, 4), 16, 10)
-        .cast("long"), lit(100L))
-    val withSplit = cells.select(col("vec_id"), col("cell"), col("embedding"),
-      when(balde < 90, "train").when(balde < 95, "val")
-        .otherwise("test").as("split"))
-    val evalSide = withSplit.filter(col("split") =!= "train")
-      .select(col("split"), col("cell"), col("vec_id").as("id_e"),
-        col("embedding").as("ee"))
-    val trainSide = withSplit.filter(col("split") === "train")
-      .select(col("cell"), col("vec_id").as("id_t"), col("embedding").as("et"))
-    val leaks = evalSide.join(trainSide, Seq("cell"))
-      .filter(round(cosineSim(col("ee"), col("et")), 4) >= 0.4)
-      .groupBy(col("split"))
-      .agg(count(lit(1)).as("lp"), count_distinct(col("id_e")).as("nl"))
-    withSplit.filter(col("split") =!= "train")
-      .groupBy(col("split")).agg(count(lit(1)).as("n_docs"))
-      .join(leaks, Seq("split"), "left")
-      .select(col("split"), col("n_docs"),
-        coalesce(col("nl"), lit(0L)).as("n_leaked"),
-        coalesce(col("lp"), lit(0L)).as("leak_pairs"),
-        (intRoundHalfAway(coalesce(col("nl"), lit(0L)) * 10000L,
-          col("n_docs")).cast("double") / 1e4).as("leak_rate"))
-      .orderBy(col("split"))
-  }
-
-  /** X38: per-source token-length distribution — log2-bucketed doc
-    * length histogram, the packing/truncation diagnostic every corpus
-    * report carries (how much of a source sits beyond the training
-    * sequence length drives the x25 packing budget and the truncation
-    * loss estimate). Bucket = floor(log2(n_tok)) computed as binary
-    * BIT LENGTH (integer-exact in both engines; a double log2 is one
-    * ulp off exactly at the power-of-2 bucket boundaries). ONE
-    * map-side-combinable aggregate over (source, bucket). */
-  val x38LengthHistogram: Q = (s, d) =>
-    Tables.documents(s, d)
-      .select(col("source"), tokenCount(col("text")).cast("long").as("n_tok"))
-      .withColumn("balde", (length(bin(col("n_tok"))) - 1).cast("int"))
-      .groupBy(col("source"), col("balde"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
-      .orderBy(col("source"), col("balde"))
-
-  /** X39: unigram log-perplexity proxy — the CCNet-style perplexity
-    * filter with a unigram LM standing in for KenLM (the container
-    * has no LM; the SHAPE is the real one): per-doc mean negative
-    * log-probability of its tokens under corpus unigram frequencies.
-    * High score = rare/garbled tokens (boilerplate and gibberish
-    * separate cleanly); the filter step is a threshold on `ppl_proxy`.
-    * Scale shape: ONE vocabulary-sized (token → count) aggregate
-    * joins back to the exploded corpus (AQE broadcasts it at fixture
-    * scale), the corpus total rides a 1-row broadcast, and the
-    * per-doc mean is an ORDER-FREE integer sum (per-token logp
-    * quantized to 1e-4 units — a raw double sum would differ between
-    * engines in the last ulp under different partitionings; ROUND at
-    * 1e-4 rather than FLOOR at 1e-6 because JVM Math.log and DuckDB
-    * LN agree only to ~1 ulp, and a probability landing on a
-    * quantization boundary would flip a fine-grained floor — 100×
-    * fewer boundary events at this granularity, same 4dp contract as
-    * x30). The FINAL per-doc mean is [[intRoundHalfAway]] — pure
-    * BIGINT half-away rounding of sum/n computed identically in both
-    * engines. (History: round 5 rounded the mean at integer scale on
-    * a DOUBLE, reasoning that a .5 at integer scale is exactly
-    * representable so both engines see the same value — true, but
-    * WHICH WAY an engine rounds an exact-.5 double is version-
-    * dependent: the round-6 judge measured 7 parity-divergent docs in
-    * x42 and 5 here at sf0.01. Integer arithmetic closes the hole.) */
   /** x39's per-doc mean unigram NLL kept in INTEGER 1e-4 units
     * (shared with x149's reducible-loss difference, which must
     * subtract the two model scores before any double conversion). */
@@ -1568,6620 +221,6 @@ object TrainingData {
         intRoundHalfAway(col("s_lp"), col("n_tok")).as("u_q"))
   }
 
-  val x39UnigramLogppl: Q = (s, d) =>
-    uniDocNllQ(Tables.documents(s, d))
-      .select(col("doc_id"), col("n_tok"),
-        (col("u_q").cast("double") / 1e4).as("ppl_proxy"))
-      .orderBy(col("doc_id"))
-
-  /** X40: BIGRAM log-perplexity proxy — one LM order closer to CCNet's
-    * KenLM than x39's unigram: per-doc mean of −ln P(wᵢ | wᵢ₋₁) under
-    * corpus bigram MLE (c(wᵢ₋₁wᵢ)/c(wᵢ₋₁)); repeated phrasing scores
-    * LOW (predictable continuations), unseen-combination gibberish
-    * scores high — the separation the unigram model can't express
-    * (it only sees token rarity). Docs with <2 tokens have no bigram
-    * and drop out (inner semantics, documented). Scale shape — and
-    * the reason this is a distinct operator, not an x39 parameter: a
-    * 100 TB corpus's BIGRAM vocabulary is itself huge (≈ unique-pair
-    * count), far past broadcast, so the count join is a SHUFFLE hash
-    * join on the gram (both sides partial-aggregated) where x39's
-    * unigram table AQE-broadcasts. Same determinism contract as x39:
-    * per-step logp quantized to 1e-4 units via ROUND (order-free
-    * integer sum; c2 ≤ c1 by construction so every step ≥ 0). */
-  /** x40's per-doc mean bigram NLL in INTEGER 1e-4 units (shared
-    * with x149 — see [[uniDocNllQ]]). */
-  private[graft] def biDocNllQ(docs: DataFrame): DataFrame = {
-    val toks = docs.select(col("doc_id"), wsTokens(col("text")).as("toks"))
-    val uni = toks.select(explode(col("toks")).as("w1"))
-      .groupBy(col("w1")).agg(count(lit(1)).as("c1"))
-    val bi = toks
-      .select(col("doc_id"), explode(allShinglesOfToks(col("toks"), 2)).as("g"))
-      .withColumn("w1", substring_index(col("g"), " ", 1))
-    val cnt2 = bi.groupBy(col("g")).agg(count(lit(1)).as("c2"))
-    bi.join(cnt2, Seq("g")).join(uni, Seq("w1"))
-      .withColumn("lp_q",
-        round(-log(col("c2").cast("double") / col("c1")) * 1e4, 0).cast("long"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("lp_q")).as("s_lp"))
-      .select(col("doc_id"), col("n_bigrams"),
-        intRoundHalfAway(col("s_lp"), col("n_bigrams")).as("b_q"))
-  }
-
-  val x40BigramLogppl: Q = (s, d) => {
-    biDocNllQ(Tables.documents(s, d))
-      .select(col("doc_id"), col("n_bigrams"),
-        (col("b_q").cast("double") / 1e4).as("ppl2_proxy"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** X42: DSIR-style importance weights (Xie et al. 2023, "Data
-    * Selection for Language Models via Importance Resampling") —
-    * score every raw document by how much more likely its tokens are
-    * under a TARGET-domain unigram LM (here `lang = 'en'`, the
-    * curation target) than under the raw-corpus LM: per-doc mean of
-    * ln p̂_target(w) − ln p̂_raw(w) with add-1 smoothing over the
-    * shared vocabulary. Positive weight ⇒ the doc "looks like" the
-    * target domain and survives importance resampling; the ranking
-    * is exactly DSIR's (hashed-)n-gram importance estimator at n=1.
-    * Scale shape: both count tables are map-side-combinable
-    * aggregates over one tokenize pass; the per-token log-ratio
-    * lives on the VOCABULARY (≪ corpus, AQE-broadcasts into the
-    * scoring join like x39's); the corpus is scanned twice —
-    * count-then-score, the same inherent two-pass as x32, staged as
-    * an ingest column at 100 TB. Determinism contract as x39/x40:
-    * the ratio is a quotient of exact integer products (< 2⁵³, so
-    * the doubles are exact), ONE ln per vocab row, quantized to
-    * 1e-4 units via ROUND, order-free integer sum per doc. */
-  /** x42/x133's shared core: (doc_id, n_tok, wq) — the per-doc DSIR
-    * importance weight as its 1e-4 BIGINT quantization. */
-  private def dsirWq(s: SparkSession, d: String): DataFrame = {
-    val tok = Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), explode(wsTokens(col("text"))).as("token"))
-    val raw = tok.groupBy(col("token")).agg(count(lit(1)).as("c_r"))
-    val tgt = tok.filter(col("lang") === "en")
-      .groupBy(col("token")).agg(count(lit(1)).as("c_t"))
-    // corpus/target token totals and vocab size — derived from the
-    // count tables (1-row, broadcast), not a re-scan of the corpus
-    val tots = raw.agg(sum(col("c_r")).as("n_r"), count(lit(1)).as("v"))
-      .crossJoin(tgt.agg(sum(col("c_t")).as("n_t")))
-    val vocab = raw.join(tgt, Seq("token"), "left")
-      .crossJoin(broadcast(tots))
-      .withColumn("lp_q", round(log(
-        ((coalesce(col("c_t"), lit(0L)) + 1) * (col("n_r") + col("v"))).cast("double")
-          / ((col("c_r") + 1) * (col("n_t") + col("v")))) * 1e4, 0).cast("long"))
-    tok.join(vocab.select(col("token"), col("lp_q")), Seq("token"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_tok"), sum(col("lp_q")).as("s_lp"))
-      .select(col("doc_id"), col("n_tok"),
-        intRoundHalfAway(col("s_lp"), col("n_tok")).as("wq"))
-  }
-
-  val x42DsirWeights: Q = (s, d) =>
-    dsirWq(s, d)
-      .select(col("doc_id"), col("n_tok"),
-        (col("wq").cast("double") / 1e4).as("dsir_weight"))
-      .orderBy(col("doc_id"))
-
-  /** X133: DSIR importance RESAMPLING — x42's weights actually
-    * applied (the selection step of Xie et al. 2023): acceptance
-    * probability p = exp(w − w_max) (relative importance, 1 at the
-    * most-target-like doc), quantized 1e-6 after the one exp (the
-    * x39 rule), and the keep decision is the x61 hash-Bernoulli made
-    * PURE INTEGER — keep iff md5₃₂(doc_id)·10⁶ < p_q·2³² (no float
-    * comparison can disagree across engines, restart-stable, no RNG
-    * state). Per source: docs, kept, keep rate, and the mean
-    * importance of the kept slice — the resampled-corpus datasheet.
-    * Shape: x42's vocabulary joins + a 1-row max broadcast + one
-    * row-local decision; nothing new is corpus-sized. */
-  val x133DsirResample: Q = (s, d) => {
-    val scored = dsirWq(s, d)
-      .join(Tables.documents(s, d).select(col("doc_id"), col("source")),
-        Seq("doc_id"))
-    val mx = scored.agg(max(col("wq")).as("mxw"))
-    val kept = col("h") * 1000000L < col("pq") * 4294967296L
-    scored.crossJoin(broadcast(mx))
-      .withColumn("pq", round(
-        exp((col("wq") - col("mxw")).cast("double") / 1e4) * 1e6, 0)
-        .cast("long"))
-      .withColumn("h",
-        graft.dedup.NearDup.md5Hash32(col("doc_id").cast("string")))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(kept, 1L).otherwise(0L)).as("n_kept"),
-        sum(when(kept, col("wq")).otherwise(0L)).as("swk"))
-      .select(col("source"), col("n_docs"), col("n_kept"),
-        (intRoundHalfAway(col("n_kept") * 10000L, col("n_docs"))
-          .cast("double") / 1e4).as("keep_rate"),
-        when(col("n_kept") > 0,
-          intRoundHalfAway(col("swk"), col("n_kept")).cast("double") / 1e4)
-          .as("mean_w_kept"))
-      .orderBy(col("source"))
-  }
-
-  /** X43: int8 scalar quantization of the embedding column — the
-    * standard 4× memory/IO reduction that makes a 100 TB ANN corpus
-    * servable (FAISS's SQ8; per-vector symmetric scale
-    * s = max|xᵢ|/127, qᵢ = round(xᵢ/s) ∈ [−127,127]). Emits the
-    * per-vector scale, the exact integer checksum of the codes
-    * (order-free determinism anchor) and the max absolute
-    * reconstruction error |x − q·s| — the bound a recall SLA is
-    * priced against (≤ s/2 by construction, asserted in the spec).
-    * Scale shape: embarrassingly row-local (one narrow projection,
-    * no shuffle but the final diagnostic sort); at 100 TB this is
-    * the map stage that writes the quantized serving copy, and the
-    * error column is the per-row audit that ships with it.
-    * Determinism: float→double widening is exact, products/quotients
-    * are IEEE-identical cross-engine (the x5/x12 proof), ROUND at
-    * integral/6dp boundaries; the only transcendental-free x-op
-    * oracle. Zero-norm vectors have no scale and drop out (inner
-    * semantics of the WHERE mx > 0 guard, mirrored in the oracle). */
-  val x43EmbedQuantize: Q = (s, d) => {
-    Tables.embeddings(s, d)
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-      .withColumn("mx", array_max(transform(col("v"), x => abs(x))))
-      .filter(col("mx") > 0)
-      .withColumn("q", transform(col("v"),
-        x => round(x * 127 / col("mx"), 0).cast("int")))
-      .select(col("vec_id"),
-        round(col("mx"), 6).as("q_scale_x127"),
-        aggregate(col("q"), lit(0L), (a, x) => a + x).as("q_checksum"),
-        round(array_max(zip_with(col("v"), col("q"),
-          (x, q) => abs(x - q * col("mx") / 127))), 6).as("max_abs_err"))
-      .orderBy(col("vec_id"))
-  }
-
-  /** X44: vocabulary coverage curve — for tokenizer-budget cutoffs
-    * k ∈ {100, 1000, 10000}, the fraction of all corpus token
-    * OCCURRENCES covered by the k most frequent token TYPES (the
-    * Zipf curve a BPE vocab size is priced against). Scale shape:
-    * the token counts are one map-side-combinable pass (x9's
-    * shuffle); the curve is then computed on the COUNT HISTOGRAM
-    * (distinct count values — thousands of rows even at 100 TB, by
-    * Zipf), NOT by a global row_number over the vocabulary, which
-    * would be a single-partition window over maybe 10⁸ rows. All
-    * tokens sharing a count are interchangeable, so a rank cutoff
-    * that lands inside a count-group contributes (k − tokens_before)
-    * × count regardless of tie order — the curve is well-defined and
-    * deterministic with no token-level ordering at all. The window
-    * runs on the histogram (months-sized frame rule,
-    * Windows.scala:9). Determinism: integer masses, one double
-    * quotient, integer-scale round ([[x39UnigramLogppl]] rule). */
-  val x44VocabCoverage: Q = (s, d) => {
-    val cnt = Tables.documents(s, d)
-      .select(explode(wsTokens(col("text"))).as("token"))
-      .groupBy(col("token")).agg(count(lit(1)).as("c"))
-    val hist = cnt.groupBy(col("c"))
-      .agg(count(lit(1)).as("n"), (col("c") * count(lit(1))).as("tok_mass"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("c").desc)
-      .rangeBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val cum = hist
-      .withColumn("cum_after", sum(col("n")).over(w))
-      .withColumn("cum_prev", col("cum_after") - col("n"))
-    val tot = hist.agg(sum(col("tok_mass")).as("total_tok"),
-      sum(col("n")).as("total_vocab"))
-    val ks = s.range(1, 2).select(explode(array(lit(100), lit(1000), lit(10000))).as("k"))
-    ks.join(cum, col("cum_prev") < col("k"))
-      .groupBy(col("k"))
-      .agg(sum(when(col("cum_after") <= col("k"), col("tok_mass"))
-        .otherwise((col("k") - col("cum_prev")) * col("c"))).as("covered_tok"))
-      .crossJoin(broadcast(tot))
-      .select(col("k"),
-        least(col("k").cast("long"), col("total_vocab")).as("vocab_k"),
-        col("covered_tok").cast("long").as("covered_tok"),
-        (intRoundHalfAway(col("covered_tok").cast("long") * 10000L,
-          col("total_tok")).cast("double") / 1e4).as("coverage"))
-      .orderBy(col("k"))
-  }
-
-  /** X45: per-cluster embedding diversity — for each `label` (the
-    * cluster id on the embeddings fixture), the mean pairwise
-    * squared L2 distance between member vectors, via the identity
-    * Σᵢⱼ‖xᵢ−xⱼ‖²/n² = 2·Σ_d (n·Σᵢq²ᵢd − (Σᵢqᵢd)²)/n² — a
-    * cluster-compactness audit that prices SemDeDup cell sizes and
-    * flags collapsed (near-duplicate) clusters without materializing
-    * any pair. Scale shape: posexplode to (label, dim) partial sums
-    * — one map-side-combinable shuffle on a key space of
-    * |labels|×dim; NO pairwise join anywhere, so a 10⁹-vector
-    * cluster costs the same two aggregations as a 10³ one.
-    * Determinism: components quantized to integers at 1e-6
-    * (float→double widening exact, one IEEE multiply, integer-scale
-    * round); all sums are int64 (exact, order-free); the one final
-    * int64→double conversion rounds identically in both engines;
-    * integer-scale round at 1e-6 on the output. */
-  val x45ClusterDiversity: Q = (s, d) => {
-    val q = Tables.embeddings(s, d)
-      .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "x")))
-      .withColumn("q", round(col("x").cast("double") * 1e6, 0).cast("long"))
-    val perDim = q.groupBy(col("label"), col("dim"))
-      .agg(count(lit(1)).as("n"), sum(col("q")).as("s"),
-        sum(col("q") * col("q")).as("ss"))
-    perDim.groupBy(col("label"))
-      .agg(max(col("n")).as("n_vecs"),
-        sum(col("n") * col("ss") - col("s") * col("s")).as("m2"))
-      .select(col("label"), col("n_vecs"),
-        (intRoundHalfAway(col("m2") * 2L,
-          col("n_vecs") * col("n_vecs") * 1000000L).cast("double") / 1e6)
-          .as("mean_pair_sqdist"))
-      .orderBy(col("label"))
-  }
-
-  /** X46: embedding covariance matrix — the d×d (upper-triangle)
-    * sample covariance of the corpus embeddings via the one-pass
-    * Gram identity Cov_ij = (n·Σq_iq_j − S_iS_j)/n², the precursor
-    * every PCA / whitening / mahalanobis-outlier stage needs before
-    * touching 100 TB of vectors. Scale shape: NO self-join — the
-    * pair space is generated row-locally by chaining two posexplodes
-    * (each exploded row carries the parent array), so the only
-    * shuffle is the map-side-combinable groupBy on (i, j) — a key
-    * space of d(d+1)/2 = 2080 cells at d=64 regardless of corpus
-    * size. The per-dim sums S_i are d rows — computed by a cheap
-    * single-explode pass and PINNED as a driver-local relation (the
-    * [[graft.ml.IvfIndex]] centroid pattern): Spark re-executes a
-    * lazy plan per reference, so joining the d²-explode aggregate to
-    * filtered views of ITSELF would run the expensive pass three
-    * times; pinning makes it run exactly once (plan-asserted: one
-    * embeddings scan). Determinism: [[x45ClusterDiversity]]
-    * contract — 1e-6 integer quantization, exact int64 sums (n·P and
-    * S_iS_j peak ~7e18 at sf0.1, inside int64; a 100 TB run promotes
-    * the accumulators to decimal(38,0)), one int64→double conversion,
-    * mirrored division order, integer-scale round at 1e-8. */
-  val x46EmbedCovariance: Q = (s, d) => {
-    import scala.jdk.CollectionConverters._
-    val n = Tables.embeddings(s, d).count()
-    // d rows after a d-explode (not d²) pass — collect + re-create as
-    // a local relation so the big pass below is the plan's only scan.
-    val sumsDf = Tables.embeddings(s, d)
-      .select(posexplode(col("embedding")).as(Seq("i", "xi")))
-      .withColumn("qi", round(col("xi").cast("double") * 1e6, 0).cast("long"))
-      .groupBy(col("i")).agg(sum(col("qi")).as("s_"))
-    val sums = s.createDataFrame(sumsDf.collect().toSeq.asJava, sumsDf.schema)
-    val pairs = Tables.embeddings(s, d)
-      .select(col("embedding"), posexplode(col("embedding")).as(Seq("i", "xi")))
-      .withColumn("qi", round(col("xi").cast("double") * 1e6, 0).cast("long"))
-      .select(col("i"), col("qi"), posexplode(col("embedding")).as(Seq("j", "xj")))
-      .filter(col("j") >= col("i"))
-      .withColumn("qj", round(col("xj").cast("double") * 1e6, 0).cast("long"))
-    pairs.groupBy(col("i"), col("j"))
-      .agg(sum(col("qi") * col("qj")).as("p"))
-      .join(broadcast(sums.select(col("i"), col("s_").as("s_i"))), "i")
-      .join(broadcast(sums.select(col("i").as("j"), col("s_").as("s_j"))), "j")
-      .select(col("i"), col("j"),
-        (intRoundHalfAway(lit(n) * col("p") - col("s_i") * col("s_j"),
-          lit(n * n * 10000L)).cast("double") / 1e8).as("cov"))
-      .orderBy(col("i"), col("j"))
-  }
-
-  /** X47: inter-source corpus overlap — estimated shingle-set
-    * Jaccard for every source pair via source-level MinHash
-    * signatures ([[graft.dedup.NearDup.sourceMinhashOverlap]] — the
-    * reusable facade carries the logic so the oracle covers library
-    * code). The signature is ONE map-side-combinable aggregation
-    * (min of codegen-hashed shingles) onto |sources|×k cells;
-    * the pairwise compare runs on the pinned driver-local signature
-    * table, so corpus size only prices the single scan. Integer
-    * hashes end-to-end + a power-of-two k make the estimate
-    * hash-exact cross-engine. */
-  val x47SourceOverlap: Q = (s, d) =>
-    graft.dedup.NearDup.sourceMinhashOverlap(
-      spread(s, Tables.documents(s, d)))
-
-  /** X48: embedding correlation matrix — Pearson corr_ij on the
-    * same one-pass Gram shape as [[x46EmbedCovariance]]:
-    * corr = (n·ΣQ_iQ_j − S_iS_j) / √((n·ΣQ_i² − S_i²)(n·ΣQ_j² − S_j²)),
-    * every moment an exact int64 from the 1e-6-quantized components.
-    * The d-row diagonal moments (S_i, ΣQ_i²) come from the cheap
-    * single-explode pass and are pinned driver-local, so — like
-    * x46 — the d²-explode is the plan's only corpus scan and the
-    * only shuffle is the (i,j) groupBy onto d(d+1)/2 cells.
-    * Determinism: numerator and variances are integer-exact; the
-    * one double step (quotient + IEEE-exact sqrt) is written
-    * identically in both engines (bit-identical per the m1
-    * piecewise-trend precedent), then rounded at 6dp. The diagonal
-    * is exactly 1 (√ of a perfect square); zero-variance dims yield
-    * NULL via nullif. */
-  val x48EmbedCorrelation: Q = (s, d) => {
-    import scala.jdk.CollectionConverters._
-    val n = Tables.embeddings(s, d).count()
-    val diagDf = Tables.embeddings(s, d)
-      .select(posexplode(col("embedding")).as(Seq("i", "xi")))
-      .withColumn("qi", round(col("xi").cast("double") * 1e6, 0).cast("long"))
-      .groupBy(col("i"))
-      .agg(sum(col("qi")).as("s_"), sum(col("qi") * col("qi")).as("p2"))
-      .select(col("i"), col("s_"), (lit(n) * col("p2") - col("s_") * col("s_")).as("v_"))
-    val diag = s.createDataFrame(diagDf.collect().toSeq.asJava, diagDf.schema)
-    val pairs = Tables.embeddings(s, d)
-      .select(col("embedding"), posexplode(col("embedding")).as(Seq("i", "xi")))
-      .withColumn("qi", round(col("xi").cast("double") * 1e6, 0).cast("long"))
-      .select(col("i"), col("qi"), posexplode(col("embedding")).as(Seq("j", "xj")))
-      .filter(col("j") >= col("i"))
-      .withColumn("qj", round(col("xj").cast("double") * 1e6, 0).cast("long"))
-    pairs.groupBy(col("i"), col("j"))
-      .agg(sum(col("qi") * col("qj")).as("p"))
-      .join(broadcast(diag.select(col("i"), col("s_").as("s_i"), col("v_").as("v_i"))), "i")
-      .join(broadcast(diag.select(col("i").as("j"), col("s_").as("s_j"), col("v_").as("v_j"))), "j")
-      .select(col("i"), col("j"),
-        round((lit(n) * col("p") - col("s_i") * col("s_j")).cast("double")
-          / sqrt(nullif(col("v_i"), lit(0L)).cast("double")
-            * nullif(col("v_j"), lit(0L)).cast("double")), 6).as("corr"))
-      .orderBy(col("i"), col("j"))
-  }
-
-  /** X49: PCA top-component projection — every vector's score along
-    * the corpus's first principal direction, the axis a whitening /
-    * outlier-trim / visualization stage needs. Factorization follows
-    * the k-means split ([[graft.ml.IvfIndex]]): the d×d covariance
-    * ([[x46EmbedCovariance]]'s plan, one d²-explode pass) collapses
-    * to the DRIVER, the eigensolve is 50 rounds of power iteration
-    * on 64×64 doubles (trivially driver-sized at ANY corpus scale —
-    * that's the point of the Gram identity), and only the embarrass-
-    * ingly-parallel projection runs distributed: a row-local ordered
-    * fold against the broadcast-literal eigenvector, no shuffle but
-    * the output sort. Oracle determinism: the covariance doubles are
-    * hash-proven identical cross-engine (x46), power iteration is
-    * +,×,÷,abs,max in the same order on both sides (bit-identical
-    * IEEE, the m1 precedent — max-abs normalization each round, so
-    * no transcendental until one final IEEE-exact sqrt), and the
-    * projection fold mirrors list_sum's left-to-right accumulation
-    * (the x5/x12 cosSql contract). */
-  val x49PcaProject: Q = (s, d) => {
-    val covRows = x46EmbedCovariance(s, d).collect()
-    val dims = covRows.iterator.map(_.getInt(1)).max + 1
-    val m = Array.ofDim[Double](dims, dims)
-    covRows.foreach { r =>
-      val (i, j, c) = (r.getInt(0), r.getInt(1), r.getDouble(2))
-      m(i)(j) = c; m(j)(i) = c
-    }
-    var v = Array.fill(dims)(1.0)
-    for (_ <- 0 until 50) {
-      val w = Array.tabulate(dims)(i =>
-        m(i).zip(v).map { case (a, b) => a * b }.sum)
-      val mx = w.map(math.abs).max
-      v = w.map(_ / mx)
-    }
-    val u = { val s2 = v.map(x => x * x).sum; v.map(_ / math.sqrt(s2)) }
-    val ulit = array(u.map(lit): _*)
-    Tables.embeddings(s, d)
-      .select(col("vec_id"),
-        round(aggregate(
-          zip_with(col("embedding"), ulit, (x, y) => x.cast("double") * y),
-          lit(0.0), (acc, x) => acc + x), 6).as("pc1_score"))
-      .orderBy(col("vec_id"))
-  }
-
-  /** X50: temperature-scaled source mixture weights — the UniMax /
-    * multilingual-sampling recipe: p_s ∝ tok_s^α with α = 1/2, plus
-    * the expected epochs each source runs at a one-epoch-equivalent
-    * token budget (epochs > 1 ⇒ the source repeats; the overfitting
-    * signal data schedulers balance against). One map-side-combinable
-    * count pass onto |sources| rows; the denominator Σ√tok_s is a
-    * DETERMINISTIC ordered fold over the pinned per-source table
-    * (sorted by source — a groupBy-sum of doubles would be partition-
-    * order-nondeterministic; the oracle mirrors with
-    * `list_sum(list(... ORDER BY source))`). √ is IEEE-exact, tokens
-    * are int64-exact, the two quotients are written identically in
-    * both engines. */
-  val x50MixtureWeights: Q = (s, d) => {
-    val toks = Tables.documents(s, d)
-      .groupBy(col("source")).agg(sum(tokenCount(col("text"))).as("tok"))
-    val rows = toks.collect().map(r => (r.getString(0), r.getLong(1)))
-      .sortBy(_._1)
-    val denom = rows.foldLeft(0.0)((acc, r) => acc + math.sqrt(r._2.toDouble))
-    val budget = rows.map(_._2).sum
-    import s.implicits._
-    rows.toSeq.toDF("source", "tok")
-      .select(col("source"), col("tok"),
-        round(sqrt(col("tok").cast("double")) / lit(denom), 6).as("p_sample"),
-        round(lit(budget).cast("double")
-          * (sqrt(col("tok").cast("double")) / lit(denom))
-          / col("tok").cast("double"), 6).as("epochs"))
-      .orderBy(col("source"))
-  }
-
-  /** X51: per-dimension embedding standardization — the z-scored
-    * serving copy every whitening / outlier-trim / calibrated-ANN
-    * stage wants, exploded to (vec_id, dim, z). In q-space the score
-    * is all-integer until one division: z = (n·q − S_i)/√(n·ΣQ_i²
-    * − S_i²) — the same pinned diagonal moments as
-    * [[x48EmbedCorrelation]], attached via broadcast-literal arrays
-    * (`element_at`, no join at all), so the plan is scan → explode →
-    * project → sort: row-local, shuffle only for the output sort.
-    * Zero-variance dims yield NULL via nullif. */
-  val x51EmbedStandardize: Q = (s, d) => {
-    val n = Tables.embeddings(s, d).count()
-    val diagDf = Tables.embeddings(s, d)
-      .select(posexplode(col("embedding")).as(Seq("i", "xi")))
-      .withColumn("qi", round(col("xi").cast("double") * 1e6, 0).cast("long"))
-      .groupBy(col("i"))
-      .agg(sum(col("qi")).as("s_"),
-        (lit(n) * sum(col("qi") * col("qi")) - sum(col("qi")) * sum(col("qi"))).as("v_"))
-    val diag = diagDf.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1)
-    val sArr = array(diag.map(t => lit(t._2)): _*)
-    val vArr = array(diag.map(t => lit(t._3)): _*)
-    Tables.embeddings(s, d)
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "xi")))
-      .withColumn("qi", round(col("xi").cast("double") * 1e6, 0).cast("long"))
-      .select(col("vec_id"), col("i"),
-        round((lit(n) * col("qi") - element_at(sArr, col("i") + 1)).cast("double")
-          / sqrt(nullif(element_at(vArr, col("i") + 1), lit(0L)).cast("double")), 6)
-          .as("z"))
-      .orderBy(col("vec_id"), col("i"))
-  }
-
-  /** X52: cross-document n-gram novelty — per doc, the fraction of
-    * its distinct 3-grams that occur in NO other document
-    * (document frequency 1). Low novelty flags templated /
-    * boilerplate-heavy docs — the cross-corpus complement of x41's
-    * within-doc repetition (Gopher prices a doc against itself;
-    * this prices it against the corpus). Shape: a df-1 shingle has
-    * exactly ONE owning doc, so `min(doc_id)` inside the df
-    * aggregation attributes uniqueness without ever joining back on
-    * the shingle key — both shuffles land on doc-keyed tables and
-    * the final join is doc-sized (a shingle-keyed join-back would
-    * re-shuffle the full posting set, the thing to avoid at 100 TB).
-    * Docs shorter than n tokens have no shingles and drop out
-    * (documented; both engines agree). */
-  val x52NgramNovelty: Q = (s, d) => {
-    val sh = spread(s, Tables.documents(s, d))
-      .select(col("doc_id"),
-        explode(shinglesOfToks(wsTokens(col("text")), 3)).as("sh"))
-    val perDoc = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
-    val uniq = sh.groupBy(col("sh"))
-      .agg(count(lit(1)).as("df"), min(col("doc_id")).as("owner"))
-      .filter(col("df") === 1)
-      .groupBy(col("owner")).agg(count(lit(1)).as("n_unique"))
-    val nov = intRoundHalfAway(coalesce(col("n_unique"), lit(0L)) * 10000L,
-      col("n_grams")).cast("double") / 1e4
-    perDoc.join(uniq, perDoc("doc_id") === uniq("owner"), "left")
-      .select(col("doc_id"), col("n_grams"),
-        coalesce(col("n_unique"), lit(0L)).as("n_unique"),
-        nov.as("novelty"),
-        (nov < 0.2).as("templated"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** X53: per-doc character-entropy quality signal — Shannon entropy
-    * in bits over the document's character distribution. Near-zero
-    * entropy flags degenerate / repeated-char docs, abnormally high
-    * entropy flags binary-ish payloads — both standard cheap
-    * pre-filters ahead of the expensive dedup / LM-scoring stages.
-    * Shape: explode to (doc_id, char) and count — that shuffle is
-    * map-side combinable and lands doc-keyed; the per-doc total then
-    * rides a doc-partitioned window, and the final entropy
-    * aggregation groups on the SAME key, so Catalyst reuses one
-    * hash partitioning for all three stages (plan-asserted: a single
-    * doc_id exchange). The exchange moves the PRE-explode doc rows —
-    * hash(doc_id) partitioning on doc_id alone satisfies the
-    * (doc_id, ch) clustering, the doc_id window, AND the final doc_id
-    * group, so the per-char rows never shuffle: one text-sized
-    * exchange instead of a (doc × distinct-char) partial-agg shuffle.
-    * Determinism: the ln(c/n) term is quantized to
-    * 1e-4 units via ROUND (the x39 logp recipe) so the per-doc sum
-    * is an order-free integer sum; ln2 is pinned as a literal double
-    * in BOTH engines and the final bits value rounds at integer
-    * scale (PLANS.md determinism note). */
-  val x53CharEntropy: Q = (s, d) => {
-    val ln2 = 0.6931471805599453
-    Tables.documents(s, d)
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id"), explode(split(col("text"), "")).as("ch"))
-      .groupBy(col("doc_id"), col("ch")).agg(count(lit(1)).as("c"))
-      .withColumn("n", sum(col("c")).over(Window.partitionBy("doc_id")))
-      .withColumn("tq",
-        round(log(col("c").cast("double") / col("n").cast("double")) * 1e4, 0)
-          .cast("long"))
-      .groupBy(col("doc_id"))
-      .agg(max(col("n")).as("n_chars"),
-        count(lit(1)).as("n_distinct"),
-        sum(col("c") * col("tq")).as("hq"))
-      // mean nats-per-char rounds in pure BIGINT ([[intRoundHalfAway]]:
-      // -hq/n_chars is an exact integer ratio — the .5 hazard); the
-      // single ln2 division afterwards is the same IEEE op on the same
-      // integer in both engines, so it stays deterministic.
-      .select(col("doc_id"), col("n_chars"), col("n_distinct"),
-        (intRoundHalfAway(-col("hq"), col("n_chars")).cast("double")
-          / 1e4 / lit(ln2)).as("entropy_bits"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** X54: tokenizer-fertility audit per source — subword-ish tokens
-    * per word and bytes per token, the two numbers a tokenizer choice
-    * and a token-budget plan are built on (a source whose fertility
-    * runs hot eats budget without adding text). Single corpus scan,
-    * all-integer map-side-combinable sums onto |sources| rows; the
-    * two ratios round at integer scale. At 100 TB this is the same
-    * one-pass shape: the shuffle moves |sources| rows, never text. */
-  val x54TokenFertility: Q = (s, d) =>
-    Tables.documents(s, d)
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(tokenCount(col("text")).cast("long")).as("n_words"),
-        sum(bpeishCount(col("text")).cast("long")).as("n_bpeish"),
-        sum(octet_length(col("text")).cast("long")).as("n_bytes"))
-      .select(col("source"), col("n_docs"), col("n_words"),
-        col("n_bpeish"), col("n_bytes"),
-        (intRoundHalfAway(col("n_bpeish") * 10000L, col("n_words"))
-          .cast("double") / 1e4).as("fertility"),
-        (intRoundHalfAway(col("n_bytes") * 10000L, col("n_bpeish"))
-          .cast("double") / 1e4).as("bytes_per_tok"))
-      .orderBy(col("source"))
-
-  /** X55: per-source language drift — Jensen–Shannon divergence (in
-    * bits) between each source's language distribution and the
-    * corpus-wide one. The mixture-balancing counterpart of x47's
-    * content overlap: a source whose JSD spikes is feeding the
-    * training mix a different language profile than the corpus it is
-    * supposed to extend. Shape: ONE corpus scan onto the
-    * |sources|×|langs| count grid, pinned driver-local; every
-    * downstream table (source totals, corpus language mass, the
-    * zero-filled grid) derives from that tiny local relation, so the
-    * joins are broadcast-sized at any corpus scale and the returned
-    * plan scans no parquet at all. Determinism: both KL halves are expanded to
-    * integer-count × quantized-log form — Σ p·ln(p/m) =
-    * (1/ns)·Σ c·round(ln(p/m)·1e6) — so the per-source sums are
-    * order-free integer sums; p=0 terms vanish exactly, q>0 always
-    * (every language exists corpus-wide by construction). */
-  val x55LangDivergence: Q = (s, d) => {
-    val ln2 = 0.6931471805599453
-    // pin the count grid driver-local (x50 pattern): it is referenced
-    // four times below and a DataFrame re-executes its plan per
-    // reference — pinning makes this ONE corpus scan, and the final
-    // plan reads only local relations (plan-asserted)
-    val cnts = {
-      val c = Tables.documents(s, d)
-        .groupBy(col("source"), col("lang")).agg(count(lit(1)).as("c"))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(c.collect().toSeq.asJava, c.schema)
-    }
-    val srcTot = cnts.groupBy(col("source")).agg(sum(col("c")).as("ns"))
-    val langTot = cnts.groupBy(col("lang")).agg(sum(col("c")).as("cq"))
-    val tot = cnts.agg(sum(col("c")).as("n"))
-    val p = col("c").cast("double") / col("ns").cast("double")
-    val q = col("cq").cast("double") / col("n").cast("double")
-    val m = (p + q) / lit(2)
-    srcTot.crossJoin(broadcast(langTot)).crossJoin(broadcast(tot))
-      .join(cnts, Seq("source", "lang"), "left")
-      .na.fill(0L, Seq("c"))
-      .withColumn("tp",
-        when(col("c") > 0, round(log(p / m) * 1e6, 0).cast("long"))
-          .otherwise(lit(0L)))
-      .withColumn("tqq", round(log(q / m) * 1e6, 0).cast("long"))
-      .groupBy(col("source"))
-      .agg(max(col("ns")).as("n_docs"), max(col("n")).as("n"),
-        sum(col("c") * col("tp")).as("hp"),
-        sum(col("cq") * col("tqq")).as("hq"))
-      // each KL half rounds as an exact integer ratio (hp/n_docs and
-      // hq/n are the .5 hazards — [[intRoundHalfAway]]); halving, the
-      // 1e6 dequantization and the ln2 nats→bits conversion are then
-      // the same IEEE double ops on the same integers in both engines.
-      .select(col("source"), col("n_docs"),
-        ((intRoundHalfAway(col("hp"), col("n_docs"))
-          + intRoundHalfAway(col("hq"), col("n"))).cast("double")
-          / lit(2e6) / lit(ln2)).as("jsd_bits"))
-      .orderBy(col("source"))
-  }
-
-  /** X56: context-window chunking — split each document into
-    * tokenizer-budget windows of 128 tokens with a 32-token overlap
-    * (stride 96), the inverse of [[x25PackSequences]]: packing fills
-    * short docs up to the context length, chunking cuts long docs
-    * down to it. Emits (doc_id, chunk_id, tok_start, n_chunk_tok,
-    * md5-of-chunk fp) — the fp stands in for shipping chunk text so
-    * the result stays audit-sized. Shape: row-local throughout (the
-    * token array is projected ONCE, then sliced per chunk under
-    * whole-stage codegen); the only exchange is the output sort —
-    * plan-asserted, the same no-join contract as x51. A 100 TB corpus
-    * chunks in a single map pass. */
-  val x56ChunkDocuments: Q = (s, d) => {
-    val C = 128; val stride = 96
-    spread(s, Tables.documents(s, d))
-      .select(col("doc_id"), wsTokens(col("text")).as("toks"))
-      .withColumn("n_tok", size(col("toks")))
-      .withColumn("n_chunks",
-        (ceil(greatest(col("n_tok") - C, lit(0)).cast("double") / stride) + 1)
-          .cast("int"))
-      .select(col("doc_id"), col("toks"), col("n_tok"),
-        explode(sequence(lit(0), col("n_chunks") - 1)).as("chunk_id"))
-      .withColumn("tok_start", col("chunk_id") * stride)
-      .withColumn("n_chunk_tok", least(col("n_tok") - col("tok_start"), lit(C)))
-      .select(col("doc_id"), col("chunk_id"), col("tok_start"),
-        col("n_chunk_tok"),
-        md5(array_join(
-          slice(col("toks"), col("tok_start") + 1, col("n_chunk_tok")), " "))
-          .as("fp"))
-      .orderBy(col("doc_id"), col("chunk_id"))
-  }
-
-  /** X57: embedding-space outlier trim — per-vector RMS z-score
-    * against the corpus per-dimension moments, the cheap Mahalanobis
-    * stand-in (diagonal covariance) that catches corrupt / off-
-    * distribution embeddings before they poison ANN neighborhoods and
-    * centroid training. Reuses [[x51EmbedStandardize]]'s pinned
-    * diagonal moments (broadcast-literal arrays via element_at — no
-    * join); the per-dim squared residual num²/V_i is quantized to
-    * integer 1e-6 units so the per-vector sum is order-free, then the
-    * mean rounds in pure BIGINT and one IEEE √ finishes (overflow and
-    * zero-variance bounds documented at the moment aggregate below).
-    * Shape: scan → explode →
-    * row-local score → map-side-combinable vec-keyed groupBy; no
-    * data-sized join at any scale. */
-  val x57EmbedOutliers: Q = (s, d) => {
-    val n = Tables.embeddings(s, d).count()
-    // Per-dim sums stay exact int64 (Σqᵢ² < 2⁶³ holds to ~10⁶ vectors
-    // at |x| ≤ 2 — 100× past the largest fixture; past that, widen the
-    // sums to decimal(38,0), the 128-bit twin of DuckDB's HUGEINT).
-    // The variance n·Σq² − S² is then formed in DOUBLE on the driver —
-    // the long product overflows around 10⁵ vectors (ADVICE r6) and
-    // the double is the same IEEE multiply/subtract DuckDB performs on
-    // its CAST-to-double sums. Zero-variance dims (v ≤ 0) contribute
-    // z² = 0 instead of a 0/0 NaN.
-    val diag = Tables.embeddings(s, d)
-      .select(posexplode(col("embedding")).as(Seq("i", "xi")))
-      .withColumn("qi", round(col("xi").cast("double") * 1e6, 0).cast("long"))
-      .groupBy(col("i"))
-      .agg(sum(col("qi")).as("s_"), sum(col("qi") * col("qi")).as("ss_"))
-      .collect().map { r =>
-        val (s0, ss0) = (r.getLong(1), r.getLong(2))
-        (r.getInt(0), s0, n.toDouble * ss0.toDouble - s0.toDouble * s0.toDouble)
-      }
-      .sortBy(_._1)
-    val sArr = array(diag.map(t => lit(t._2)): _*)
-    val vArr = array(diag.map(t => lit(t._3)): _*)
-    val dims = diag.length
-    Tables.embeddings(s, d)
-      .select(col("vec_id"), col("label"),
-        posexplode(col("embedding")).as(Seq("i", "xi")))
-      .withColumn("qi", round(col("xi").cast("double") * 1e6, 0).cast("long"))
-      .withColumn("num", lit(n) * col("qi") - element_at(sArr, col("i") + 1))
-      .withColumn("z2q",
-        when(element_at(vArr, col("i") + 1) > 0,
-          round(col("num").cast("double") * col("num").cast("double")
-            / element_at(vArr, col("i") + 1) * 1e6, 0).cast("long"))
-          .otherwise(lit(0L)))
-      .groupBy(col("vec_id"), col("label"))
-      .agg(sum(col("z2q")).as("sz"))
-      // mean-z² rounds as an exact integer ratio (sz·100/dims — the .5
-      // hazard, [[intRoundHalfAway]]); the IEEE sqrt of that integer is
-      // correctly rounded and identical in both engines, so rms_z needs
-      // no further ROUND at all.
-      .select(col("vec_id"), col("label"),
-        (sqrt(intRoundHalfAway(col("sz") * 100, lit(dims.toLong))
-          .cast("double")) / 1e4).as("rms_z"))
-      .withColumn("is_outlier", col("rms_z") > 1.2)
-      .orderBy(col("vec_id"))
-  }
-
-  /** X58: containment dedup — asymmetric n-gram containment pairs
-    * ([[graft.dedup.NearDup.containmentPairs]], C ≥ 0.9) over the
-    * dedup corpus EXTENDED with 12-token-prefix truncations (+3M
-    * ids): a truncated quote has containment 1.0 but Jaccard ≈
-    * prefix/full — the duplicate family x4's symmetric threshold
-    * structurally misses (for A ⊂ B, J = |A|/|B| shrinks with the
-    * size gap while C stays 1). Reported Jaccard alongside makes the
-    * miss visible pair-by-pair. Same posting-list shape as x4 —
-    * quadratic only within shingle postings at any corpus size. */
-  val x58ContainmentDedup: Q = (s, d) => {
-    val base = corpusWithDupes(s, d).filter(col("doc_id") % 1000000 < 200)
-    val trunc = Tables.documents(s, d)
-      .filter(col("doc_id") % 1000000 < 200)
-      .select((col("doc_id") + 3000000L).as("doc_id"),
-        array_join(slice(wsTokens(col("text")), 1, 12), " ").as("text"))
-    graft.dedup.NearDup.containmentPairs(
-      spread(s, base.unionByName(trunc)))
-      .orderBy(col("id_a"), col("id_b"))
-  }
-
-  /** X59: dedup yield audit — per-source document and token mass
-    * retained by the end-to-end near-dup dedup (x24's survivor set):
-    * the acceptance report a data lead reads before signing off a
-    * corpus drop ("how much of each source did dedup cost?"). Shape:
-    * the CC labels are doc-keyed; copies attribute back to their base
-    * doc (doc_id % 1e6) and the source attach is a doc-keyed join AQE
-    * sizes itself (no hint, the x30 precedent); the final aggregation
-    * is map-side combinable onto |sources| rows. */
-  val x59DedupMass: Q = (s, d) => {
-    val corpus = corpusWithDupes(s, d).filter(col("doc_id") % 1000000 < 200)
-    val kept = graft.dedup.NearDup
-      .survivors(corpus, ngramJaccardPairs(s, d))
-      .select(col("doc_id"), lit(1).as("kept"))
-    corpus
-      .select(col("doc_id"), (col("doc_id") % 1000000L).as("base_id"),
-        tokenCount(col("text")).cast("long").as("tok"))
-      .join(kept, Seq("doc_id"), "left")
-      .join(Tables.documents(s, d)
-        .select(col("doc_id").as("base_id"), col("source")), Seq("base_id"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(coalesce(col("kept"), lit(0))).as("n_kept"),
-        sum(col("tok")).as("tok_total"),
-        sum(when(col("kept").isNotNull, col("tok")).otherwise(lit(0L)))
-          .as("tok_kept"))
-      .select(col("source"), col("n_docs"), col("n_kept"),
-        col("tok_total"), col("tok_kept"),
-        (intRoundHalfAway(col("tok_kept") * 10000L, col("tok_total"))
-          .cast("double") / 1e4).as("kept_frac"))
-      .orderBy(col("source"))
-  }
-
-  /** Build-and-save the MinHash signature store once per sf-dir
-    * (same cache contract as [[ensureIvfIndex]]: params + fixture
-    * fingerprint in the path, first caller pays). The store covers
-    * the BASE docs (doc_id < 200 slice); batches are checked against
-    * it incrementally. The cache tag derives from the SAME
-    * (numHashes, bandRows, shingleN) values passed to the store
-    * build — and [[x60SignatureStore]] passes the identical values to
-    * the incremental probe — so a parameter drift can never silently
-    * reuse a store whose band keys were cut with other params
-    * (ADVICE r6). */
-  private val sigStoreParams = (16, 4, 3) // (numHashes, bandRows, shingleN)
-  private def ensureSigStore(s: SparkSession, d: String): String = {
-    val (k, b, sh) = sigStoreParams
-    Store.materialize("sig_store", s"v1k${k}b${b}s$sh", d, "documents") { path =>
-      graft.dedup.NearDup.saveSignatureStore(
-        spread(s, Tables.documents(s, d)
-          .filter(col("doc_id") % 1000000 < 200)
-          .select(col("doc_id"), col("text"))), path,
-        numHashes = k, bandRows = b, shingleN = sh)
-    }
-  }
-
-  /** X60: incremental near-dup against a persisted signature store —
-    * the production shape of x2: corpus signatures are computed once
-    * at ingest ([[graft.dedup.NearDup.saveSignatureStore]]); a new
-    * batch (here the exact +1M and near +2M copies) pays only its own
-    * signatures, a key-sized band join against the store, and exact
-    * verification on the colliding sliver. The near-dup analog of the
-    * x22/x29 fingerprint store and of x31's IVF probe-vs-build
-    * amortization. The oracle recomputes the full band join from
-    * scratch — proving the store path is bit-identical to a fresh
-    * two-sided LSH run. */
-  val x60SignatureStore: Q = (s, d) => {
-    val batch = corpusWithDupes(s, d)
-      .filter(col("doc_id") % 1000000 < 200 && col("doc_id") >= 1000000L)
-    val (k, b, sh) = sigStoreParams
-    graft.dedup.NearDup.incrementalNearDupPairs(
-      s, ensureSigStore(s, d), spread(s, batch),
-      numHashes = k, bandRows = b, shingleN = sh)
-      .orderBy(col("new_id"), col("old_id"))
-  }
-
-  /** X61: quality-weighted sampling — keep each doc with probability
-    * quality² (β=2 sharpens toward high quality), decided by
-    * deterministic hash thresholding: u = md5₃₂(doc_id)/2³² < q².
-    * The scale idiom for importance sampling (DSIR/quality-mix
-    * recipes): no RNG state, no shuffle, reproducible across reruns
-    * and engines — u is an exact dyadic rational (integer / 2³²) and
-    * q² one IEEE product, so the comparison is bit-identical
-    * everywhere. Row-local scan → project; the only exchange is the
-    * output sort. */
-  val x61QualitySampling: Q = (s, d) =>
-    Tables.documents(s, d)
-      .select(col("doc_id"), col("source"),
-        qualityScore(col("text"), stopwords).as("quality"))
-      .withColumn("u",
-        graft.dedup.NearDup.md5Hash32(col("doc_id").cast("string"))
-          .cast("double") / lit(4294967296.0))
-      .withColumn("p_keep", col("quality") * col("quality"))
-      .withColumn("selected", col("u") < col("p_keep"))
-      .orderBy(col("doc_id"))
-
-  /** X62: LSH recall audit — the knob-tuning table for the x2
-    * pipeline: exact-Jaccard truth pairs (x4, J ≥ 0.5) bucketed into
-    * 0.1-wide similarity bands, with the fraction the MinHash+LSH
-    * path actually caught next to the S-curve prediction
-    * 1−(1−j⁴)⁴ at the band midpoint (16 hashes, 4 bands × 4 rows).
-    * LSH verification recomputes exact Jaccard on the same shingle
-    * sets, so detected ⊆ truth and the gap is pure band-collision
-    * recall — the number that says whether to add hashes before a
-    * production run, measured on data instead of trusted from the
-    * formula. Both sides run at threshold 0.3 (below x2's production
-    * 0.5) and the corpus adds 50%- and 75%-prefix copies (+3M/+4M
-    * ids): a frac-prefix of an n-token doc has Jaccard ≈
-    * (frac·n−2)/(n−2) against its base and the prefixes pair with
-    * each other at ≈ 0.6, so the mid bands where the S-curve actually
-    * falls off are populated — the fixture's own dup pairs all sit in
-    * the top band, where every curve reads 1.0. Model arithmetic is
-    * explicit products (no pow), so both engines evaluate it
-    * bit-identically. */
-  /** The x62/x91 evaluation corpus: the dup fixture plus 50%- and
-    * 75%-prefix copies (+3M/+4M ids) so the mid-similarity bands
-    * where the S-curve actually falls off are populated. */
-  private def lshEvalCorpus(s: SparkSession, d: String): DataFrame = {
-    def prefixCopy(off: Long, frac: Double) = Tables.documents(s, d)
-      .filter(col("doc_id") % 1000000 < 200)
-      .select((col("doc_id") + off).as("doc_id"),
-        array_join(slice(wsTokens(col("text")), lit(1),
-          floor(size(wsTokens(col("text"))).cast("double") * frac)
-            .cast("int")), " ").as("text"))
-    spread(s,
-      corpusWithDupes(s, d).filter(col("doc_id") % 1000000 < 200)
-        .unionByName(prefixCopy(3000000L, 0.5))
-        .unionByName(prefixCopy(4000000L, 0.75)))
-  }
-
-  val x62LshEval: Q = (s, d) => {
-    val corpus = lshEvalCorpus(s, d)
-    val truth = graft.dedup.NearDup
-      .ngramJaccardPairs(corpus, threshold = 0.3)
-    val lsh = graft.dedup.NearDup
-      .minhashLshPairs(corpus, threshold = 0.3)
-      .select(col("id_a"), col("id_b"), lit(1).as("hit"))
-    val m = col("band") + lit(0.05)
-    val m2 = m * m; val m4 = m2 * m2
-    val miss1 = lit(1.0) - m4
-    val miss2 = miss1 * miss1
-    truth.join(lsh, Seq("id_a", "id_b"), "left")
-      .withColumn("band", least(floor(col("jaccard") * 10) / 10, lit(0.9)))
-      .groupBy(col("band"))
-      .agg(count(lit(1)).as("n_truth"),
-        sum(coalesce(col("hit"), lit(0))).as("n_found"))
-      .select(col("band"), col("n_truth"), col("n_found"),
-        (intRoundHalfAway(col("n_found") * 10000L, col("n_truth"))
-          .cast("double") / 1e4).as("recall"),
-        (round((lit(1.0) - miss2 * miss2) * 1e4, 0) / 1e4).as("recall_model"))
-      .orderBy(col("band"))
-  }
-
-  /** The (bands, rows) grid the tuner enumerates: every b×r with
-    * r ≤ 8, b ≤ 16, k = b·r ≤ 64 (k is the signature width a
-    * production MinHash run pays per document). */
-  private[graft] val lshTunerGrid: Seq[(Int, Int)] =
-    for { r <- 1 to 8; b <- 1 to 16; if b * r <= 64 } yield (b, r)
-
-  /** Closed-form S-curve points for one (b, r) config, computed the
-    * way BOTH engines will: miss = 1 − t^r folded by left-to-right
-    * double multiplication, missᵇ likewise, floor-quantized at 1e-4.
-    * t^r for t=0.5 is exact dyadic; for t=0.3 it's the deterministic
-    * product of the literal's nearest double — either way the oracle
-    * repeats the identical literal chain, so the doubles agree
-    * bit-for-bit and floor() cannot split them. */
-  private[graft] def lshCurvePoint(b: Int, r: Int, t: Double): Double = {
-    var tp = 1.0; var i = 0
-    while (i < r) { tp *= t; i += 1 }
-    val miss = 1.0 - tp
-    var mb = 1.0; var j = 0
-    while (j < b) { mb *= miss; j += 1 }
-    math.floor((1.0 - mb) * 1e4) / 1e4
-  }
-
-  /** X62b: LSH parameter auto-tuner — closes the loop x62 opened
-    * (r7 verdict item 4): instead of trusting (16, 4×4) from habit,
-    * enumerate the whole (bands, rows) grid and choose the config
-    * that minimizes candidate pull-in at junk similarity (J=0.3,
-    * `catch_lo` — x62's audit floor) subject to S-curve recall ≥ 0.9
-    * at the x2 production threshold (J=0.5, `recall_hi`) and
-    * signature budget k ≤ 64 —
-    * ties broken by cost (k + bands, the signature + band-key work
-    * per doc), then rows, then bands, so the choice is a total order.
-    * The grid is MODEL arithmetic (no corpus scan — |grid| = 103
-    * rows, driver-pinned like every bounded relation); x62 remains
-    * the on-data validation of the same S-curve family.
-    * EngineSpec pins the chosen config against an independent
-    * brute-force enumeration. */
-  val x62bLshTuner: Q = (s, _) => {
-    import s.implicits._
-    val rows = lshTunerGrid.map { case (b, r) =>
-      val hi = lshCurvePoint(b, r, 0.5)
-      val lo = lshCurvePoint(b, r, 0.3)
-      (b * r, b, r, hi, lo, (b * r + b).toLong)
-    }
-    val chosen = rows.filter(_._4 >= 0.9)
-      .sortBy { case (k, b, r, _, lo, cost) => (lo, cost, r, b) }
-      .headOption
-    s.createDataset(rows.map { case (k, b, r, hi, lo, cost) =>
-      (k.toLong, b.toLong, r.toLong, hi, lo, cost,
-        chosen.exists(c => c._2 == b && c._3 == r))
-    }).toDF("num_hashes", "bands", "rows_per_band", "recall_hi", "catch_lo",
-      "cost", "chosen")
-      .orderBy(col("rows_per_band"), col("bands"))
-  }
-
-  /** X86: per-domain document caps — the remaining standard curation
-    * op every web-scale pipeline runs before mixing (C4/RefinedWeb/
-    * Gopher all bound documents per registered domain so no host
-    * dominates the mix; the host-level sibling of x27's token-budget
-    * mixture). Rank within each source by (n_tok desc, doc_id) —
-    * prefer longer documents, deterministic ties — and keep rank ≤
-    * cap; `n_domain`/`n_kept` carry the realized per-domain histogram
-    * next to every row. Scale shape: ONE shuffle on source for the
-    * rank window (no text moves — n_tok is computed at scan, the
-    * projection drops `text` before the exchange); at production
-    * |domain| skew the rank-then-filter is exactly what
-    * [[graft.plans.TopKPerGroup]] executes with a bounded heap per
-    * group instead of a full per-group sort — the physical-operator
-    * path o8 pins; the window carrier here is the oracle-able twin. */
-  val x86DomainCap: Q = (s, d) => {
-    val cap = 15L
-    val docs = Tables.documents(s, d)
-      .select(col("source"), col("doc_id"),
-        tokenCount(col("text")).cast("long").as("n_tok"))
-    val w = Window.partitionBy(col("source"))
-      .orderBy(col("n_tok").desc, col("doc_id"))
-    docs
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .withColumn("kept", col("rk") <= cap)
-      .withColumn("n_domain",
-        count(lit(1)).over(Window.partitionBy(col("source"))).cast("long"))
-      .withColumn("n_kept", least(col("n_domain"), lit(cap)))
-      .orderBy(col("source"), col("rk"))
-  }
-
-  /** X87: boilerplate STRIP — the transform x66 only detects: drop
-    * every df-heavy 8-token segment (the CCNet/RefinedWeb repeated-
-    * line removal analog) and re-emit the cleaned document. Segment
-    * fingerprints, the df table, and the df ≥ 3 rule are IDENTICAL to
-    * x66 (one contract, detector and transform can't drift); the
-    * rebuild is a per-doc sort_array(collect_list(struct(g, seg)))
-    * over the KEPT segments — order restored by the segment index, so
-    * the aggregation is deterministic despite collect_list's
-    * partition order. Output carries the cleaned text as md5 +
-    * token count (the x17 checksum convention: hash-compare proves
-    * the rebuilt string byte-exactly without shipping text through
-    * the oracle diff). Scale shape: x66's df-keyed aggregation plus
-    * one segment-keyed groupBy — nothing all-pairs, text leaves the
-    * scan only as 8-token segments. */
-  val x87BoilerplateStrip: Q = (s, d) => {
-    val seg = spread(s, Tables.documents(s, d))
-      .select(col("doc_id"),
-        wsTokens(concat(lit("portal "), col("source"),
-          lit(" official mirror terms of service apply"
-            + " all rights reserved contact webmaster "),
-          col("text"))).as("toks"))
-      .select(col("doc_id"), col("toks"),
-        explode(sequence(lit(0L),
-          call_function("div", size(col("toks")).cast("long") + 7L, lit(8L))
-            - 1)).as("g"))
-      .select(col("doc_id"), col("g"),
-        array_join(slice(col("toks"), (col("g") * 8 + 1).cast("int"),
-          lit(8)), " ").as("segtxt"))
-      .withColumn("fp", md5(col("segtxt")))
-    val df = seg.groupBy(col("fp"))
-      .agg(countDistinct(col("doc_id")).as("df"))
-    val clean = array_join(transform(
-      sort_array(collect_list(when(col("df") < 3,
-        struct(col("g"), col("segtxt"))))),
-      x => x.getField("segtxt")), " ")
-    seg.join(df, Seq("fp"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_seg"),
-        sum(when(col("df") >= 3, 1L).otherwise(0L)).as("n_drop"),
-        md5(clean).as("clean_md5"),
-        when(length(clean) === 0, 0L)
-          .otherwise(size(split(clean, "\\s+")).cast("long"))
-          .as("clean_n_tok"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** X88: quality-aware dedup survivor selection — x14/x24 keep the
-    * MIN-id doc per near-dup family (the cheap canonical); a real
-    * curation run keeps the BEST copy (RefinedWeb keeps longest,
-    * quality-filter pipelines keep highest-scoring — the mirror of a
-    * truncated/mangled duplicate outliving its clean original).
-    * Same CC labels as x14 (one contract), each family ranked by
-    * (quality desc, doc_id): `kept_best` marks the survivor the
-    * quality rule selects. Scale shape: reads the INGEST-STAGED
-    * labels ([[ensureDedupLabels]] — the x98 contract; the closure
-    * compute is measured in x14) plus ONE family-keyed rank window
-    * over (doc_id, quality) pairs — text never enters the window
-    * exchange. The oracle recomputes the closure from scratch, so
-    * the staged labels are proven identical every run. */
-  val x88QualitySurvivors: Q = (s, d) => {
-    val corpus = corpusWithDupes(s, d).filter(col("doc_id") % 1000000 < 200)
-    val labels = s.read.parquet(ensureDedupLabels(s, d))
-    val scored = corpus.select(col("doc_id"),
-      qualityScore(col("text"), stopwords).as("quality"))
-    val w = Window.partitionBy(col("canonico"))
-      .orderBy(col("quality").desc, col("doc_id"))
-    labels.join(scored, Seq("doc_id"))
-      .withColumn("rk", row_number().over(w))
-      .select(col("doc_id"), col("canonico"), col("quality"),
-        (col("rk") === 1).as("kept_best"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** X89: language-route confusion matrix — the labeled `lang` column
-    * against x7/x79's marker route, per (label, route) cell with the
-    * within-label share: the monitoring table that says how often the
-    * cheap router disagrees with ground truth BEFORE anyone thresholds
-    * on its margin (the audit x79's `ambiguous` flag feeds). Route
-    * expression is spec-pinned ≡ x7 (same fold, same tie rule).
-    * Row-local route + one |langs|² aggregation; shares via the
-    * pure-BIGINT ratio. */
-  val x89LangConfusion: Q = (s, d) => {
-    val toksL = wsTokens(lower(col("text")))
-    val counts = markerSets.map { case (lang, ms) =>
-      size(filter(toksL, t => t.isin(ms.map(x => x: Any): _*)))
-        .cast("long").as(s"c_$lang")
-    }
-    val best = markerSets.map { case (lang, _) => col(s"c_$lang") }
-      .reduce(greatest(_, _))
-    val route = markerSets.foldRight(lit("und"): Column) {
-      case ((lang, _), acc) =>
-        when(col(s"c_$lang") === best && col(s"c_$lang") > 0, lit(lang))
-          .otherwise(acc)
-    }
-    Tables.documents(s, d)
-      .select(col("lang") +: counts: _*)
-      .select(col("lang"), route.as("lang_detectada"))
-      .groupBy(col("lang"), col("lang_detectada"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("n_lang",
-        sum(col("n")).over(Window.partitionBy(col("lang"))))
-      .select(col("lang"), col("lang_detectada"), col("n"),
-        (intRoundHalfAway(col("n") * 10000L, col("n_lang"))
-          .cast("double") / 1e4).as("share"))
-      .orderBy(col("lang"), col("lang_detectada"))
-  }
-
-  /** Build-and-save the dHash store once per sf-dir (the
-    * [[ensureSigStore]] cache contract: fixture fingerprint in the
-    * path, first caller pays, [[prebuildCaches]] pays it in Bench's
-    * untimed warmup). Covers the BASE assets (doc_id < 200 slice). */
-  private def ensureDHashStore(s: SparkSession, d: String): String =
-    Store.materialize("dhash_store", "v1", d, "documents") { path =>
-      graft.multimodal.Multimodal.saveDHashStore(s,
-        graft.multimodal.Multimodal.withBinaryPayload(
-          spread(s, Tables.documents(s, d)
-            .filter(col("doc_id") % 1000000 < 200)
-            .select(col("doc_id"), col("text")))), path)
-    }
-
-  /** X92: incremental image near-dup against the persisted dHash
-    * store — the image twin of x60's signature-store probe and the
-    * production shape of x85: corpus perceptual hashes are computed
-    * once at ingest ([[graft.multimodal.Multimodal.saveDHashStore]]);
-    * a new batch (the +1M exact and +2M near payload copies) pays its
-    * own dHashes, a key-sized band join against the store, and exact
-    * Hamming verification on the colliding sliver. On the stub codec
-    * the exact copies collide at Hamming 0 and the edited copies
-    * avalanche away (admitted) — with a real decoder the same plan
-    * drops re-encoded/resized near-identicals. The oracle recomputes
-    * the full batch × store cross-check the lossless banding must
-    * equal. */
-  val x92DhashStore: Q = (s, d) => {
-    val batch = corpusWithDupes(s, d)
-      .filter(col("doc_id") % 1000000 < 200 && col("doc_id") >= 1000000L)
-    graft.multimodal.Multimodal.incrementalDHashPairs(
-      s, ensureDHashStore(s, d),
-      graft.multimodal.Multimodal.withBinaryPayload(spread(s, batch)))
-      .orderBy(col("new_id"), col("old_id"))
-  }
-
-  /** X93: INTRA-document segment dedup — remove repeated 8-token
-    * segments WITHIN a document, keeping the first occurrence (the
-    * in-page sibling of x87's cross-corpus boilerplate strip: nav
-    * menus, repeated footers, and copy-paste loops inside ONE page —
-    * Gopher's duplicate-line-fraction filter as a transform instead
-    * of a score). Entirely ROW-LOCAL: segments, first-occurrence
-    * test (array_position of the segment's md5 in the per-doc hash
-    * list — position returns the FIRST hit, so a later duplicate
-    * fails the index equality), and rebuild are higher-order array
-    * functions inside one projection — no explode, no shuffle but
-    * the output sort; the 100 TB cost is the scan itself. Cleaned
-    * text leaves as md5 + token count (x17/x87 checksum
-    * convention). */
-  val x93IntradocDedup: Q = (s, d) => {
-    // fixture text has no natural in-page repetition — the STAGED
-    // derived fixture ([[ensurePlantedFixtures]]) prepends every
-    // third doc's first 8-token segment (segment-aligned by
-    // construction), so the dedup provably fires and provably keeps
-    // first occurrences; the query body itself is purely operational
-    // and the oracle recomputes the plant from the base table
-    val corpus = spread(s,
-      s.read.parquet(s"${ensurePlantedFixtures(s, d)}/docs_intradup"))
-    val toks = wsTokens(col("text"))
-    val nseg = call_function("div", size(toks).cast("long") + 7L, lit(8L))
-    val segs = transform(sequence(lit(0L), nseg - 1),
-      g => array_join(slice(toks, (g * 8 + 1).cast("int"), lit(8)), " "))
-    val hashes = transform(segs, sg => md5(sg))
-    val kept = filter(segs, (sg, i) =>
-      array_position(hashes, md5(sg)) === (i + 1).cast("long"))
-    val clean = array_join(kept, " ")
-    corpus
-      .filter(size(toks) > 0)
-      .select(col("doc_id"),
-        size(segs).cast("long").as("n_seg"),
-        (size(segs) - size(kept)).cast("long").as("n_dup"),
-        md5(clean).as("clean_md5"),
-        when(length(clean) === 0, 0L)
-          .otherwise(size(split(clean, "\\s+")).cast("long"))
-          .as("clean_n_tok"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Build-and-save the near-dup cluster labels once per sf-dir —
-    * the [[ensureCuratedStaged]] contract applied to the dedup
-    * family: in production the CC labels are computed ONCE at
-    * curation time and every downstream consumer (survivor filter,
-    * soft weights, graph stats, leakage audits) joins the labels
-    * table instead of re-running shingles → pairs → closure.
-    * [[prebuildCaches]] pays it in Bench's untimed warmup. */
-  private def ensureDedupLabels(s: SparkSession, d: String): String =
-    Store.materialize("dedup_labels", "v1", d, "documents") { path =>
-      graft.dedup.NearDup.clusters(
-        corpusWithDupes(s, d).filter(col("doc_id") % 1000000 < 200),
-        ngramJaccardPairs(s, d))
-        .select(col("doc_id"), col("canonico"))
-        .write.mode("overwrite").parquet(path)
-    }
-
-  /** X98: staged dedup-label read path — the x32/x32b split for the
-    * dedup family: x14 is the compute-the-closure carrier (the cost
-    * is measured there), x98 is what every OTHER consumer runs at
-    * 100 TB — one scan of the ingest-staged labels table plus a
-    * family-keyed window, no shingles, no pair join, no closure
-    * (plan-asserted in PlansSpec). Same oracle family as x14 — the
-    * recursive closure recomputed from scratch — proving the staged
-    * table carries the exact labels. */
-  val x98StagedDedup: Q = (s, d) =>
-    s.read.parquet(ensureDedupLabels(s, d))
-      .withColumn("family_size",
-        count(lit(1)).over(Window.partitionBy(col("canonico"))).cast("long"))
-      .select(col("doc_id"), col("canonico"),
-        (col("doc_id") === col("canonico")).as("sobrevivente"),
-        col("family_size"))
-      .orderBy(col("doc_id"))
-
-  /** X99: product-quantization recall audit — the acceptance test for
-    * the PQ serving copy ([[graft.ml.PqIndex]]: 8 subspaces × 16
-    * centroids, 2 Lloyd iterations, 8 codes ≈ 8 bytes per vector vs
-    * 256 for floats): recall@10 of the asymmetric-distance (ADC)
-    * ranking against the exact L2 ranking, both computed off ONE
-    * scored sliver (the x74 SQ8-audit shape — PQ is the other
-    * standard compression, codebook instead of per-vector scalar).
-    * Determinism: subspace distances quantize to ROUND(‖·‖²·1e6)
-    * BIGINT, so the ADC total is an order-free integer sum and both
-    * rankings are integer sorts with nid tie-break. Scale shape: the
-    * codebook is m·k = 128 rows (driver-pinned; training scans the
-    * corpus 2·iters times, all map-side-combinable); scoring here
-    * materializes per-(query, vector, subspace) rows for the oracle's
-    * benefit — at serving scale ADC is a per-query m×k lookup table
-    * and each candidate costs m table reads, composed with x31's IVF
-    * pruning (the standard IVF-PQ layout). */
-  val x99PqRecall: Q = (s, d) => {
-    val emb = spread(s, Tables.embeddings(s, d))
-    val cents = graft.ml.PqIndex.trainCodebook(emb)
-    val codes = graft.ml.PqIndex.encode(emb, cents)
-    // codes carries cents in its lineage (encode's assignment joined
-    // it) — alias both sides so the second cents reference resolves
-    val nce = codes.as("cd").join(broadcast(cents.as("ct")),
-        col("cd.m") === col("ct.m") && col("cd.code") === col("ct.cid"))
-      .select(col("cd.vec_id").as("nid"), col("cd.m").as("m"),
-        col("ct.ce").as("ce"))
-    val queries = emb.filter(col("vec_id") < 5)
-    val qs = graft.ml.PqIndex.subvectors(queries, 8, 8)
-      .select(col("vec_id").as("qid"), col("m"), col("sub").as("qsub"))
-    val adc = nce.join(broadcast(qs), Seq("m"))
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("dq", graft.ml.PqIndex.l2q(col("qsub"), col("ce")))
-      .groupBy(col("qid"), col("nid"))
-      .agg(sum(col("dq")).as("adc_q"))
-    val ex = emb.select(col("vec_id").as("nid"), col("embedding").as("ne"))
-      .crossJoin(broadcast(queries
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))))
-      .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        graft.ml.PqIndex.l2q(col("qe"), col("ne")).as("ex_q"))
-    val rf = Window.partitionBy(col("qid")).orderBy(col("ex_q"), col("nid"))
-    val rq = Window.partitionBy(col("qid")).orderBy(col("adc_q"), col("nid"))
-    ex.join(adc, Seq("qid", "nid"))
-      .withColumn("rf", row_number().over(rf))
-      .withColumn("rq", row_number().over(rq))
-      .groupBy(col("qid"))
-      .agg(sum(when(col("rf") <= 10 && col("rq") <= 10, 1L).otherwise(0L))
-        .as("n_match"))
-      .select(col("qid"), col("n_match"),
-        (col("n_match").cast("double") / 10).as("recall_at_10"))
-      .orderBy(col("qid"))
-  }
-
-  /** X99b: OPQ recall audit — x99 with the parametric OPQ rotation
-    * ([[graft.ml.Opq]]: full-eigenbasis rotation + Ge's eigenvalue
-    * allocation) applied before coding, the standard upgrade wherever
-    * PQ serves (decorrelated, information-balanced subspaces). Same
-    * output contract as x99 (per-query exact-vs-ADC recall@10), with
-    * BOTH sides of the comparison defined in the rotated geometry
-    * (the rotation is orthogonal only up to power-iteration
-    * convergence, and both engines compute the identical
-    * approximation — see [[graft.ml.Opq]]). Scale shape: covariance
-    * moments collapse to a d²-cell driver relation (corpus scanned
-    * once), the d-deep eigensolve + allocation are corpus-size-free
-    * driver arithmetic, the rotation is a row-local fold against
-    * broadcast-literal rows (localCheckpointed once — it feeds train,
-    * encode, queries AND exact ranks), and everything after is x99's
-    * audit verbatim. Like x99 this is a BUILD-path audit (codebook
-    * training included); serving stays with x100's store. EngineSpec
-    * pins OPQ distortion < natural-PQ distortion AND recall ≥ on a
-    * crafted correlated micro-set (near-isotropic fixture data makes
-    * the fixture-side margin noise — the x83 micro-pin precedent). */
-  val x99bOpqRecall: Q = (s, d) => {
-    val (mat, _, _) = graft.ml.Opq.covariance(Tables.embeddings(s, d))
-    val rows = graft.ml.Opq.rotationRows(
-      graft.ml.Opq.eigensolve(mat, mat.length), m = 8, dsub = 8)
-    val emb = spread(s, Tables.embeddings(s, d))
-      .select(col("vec_id"),
-        graft.ml.Opq.rotateCol(col("embedding"), rows).as("embedding"))
-      .localCheckpoint()
-    val cents = graft.ml.PqIndex.trainCodebook(emb)
-    val codes = graft.ml.PqIndex.encode(emb, cents)
-    val nce = codes.as("cd").join(broadcast(cents.as("ct")),
-        col("cd.m") === col("ct.m") && col("cd.code") === col("ct.cid"))
-      .select(col("cd.vec_id").as("nid"), col("cd.m").as("m"),
-        col("ct.ce").as("ce"))
-    val queries = emb.filter(col("vec_id") < 5)
-    val qs = graft.ml.PqIndex.subvectors(queries, 8, 8)
-      .select(col("vec_id").as("qid"), col("m"), col("sub").as("qsub"))
-    val adc = nce.join(broadcast(qs), Seq("m"))
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("dq", graft.ml.PqIndex.l2q(col("qsub"), col("ce")))
-      .groupBy(col("qid"), col("nid"))
-      .agg(sum(col("dq")).as("adc_q"))
-    val ex = emb.select(col("vec_id").as("nid"), col("embedding").as("ne"))
-      .crossJoin(broadcast(queries
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))))
-      .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        graft.ml.PqIndex.l2q(col("qe"), col("ne")).as("ex_q"))
-    val rf = Window.partitionBy(col("qid")).orderBy(col("ex_q"), col("nid"))
-    val rq = Window.partitionBy(col("qid")).orderBy(col("adc_q"), col("nid"))
-    ex.join(adc, Seq("qid", "nid"))
-      .withColumn("rf", row_number().over(rf))
-      .withColumn("rq", row_number().over(rq))
-      .groupBy(col("qid"))
-      .agg(sum(when(col("rf") <= 10 && col("rq") <= 10, 1L).otherwise(0L))
-        .as("n_match"))
-      .select(col("qid"), col("n_match"),
-        (col("n_match").cast("double") / 10).as("recall_at_10"))
-      .orderBy(col("qid"))
-  }
-
-  /** X109: incremental IVF maintenance audit — the FAISS
-    * train-then-add operating model x60/x92 already prove for
-    * signature stores, applied to the ANN serving index: the
-    * quantizer is trained on the PRE-BATCH base corpus only
-    * ([[ensureIvfBaseStore]], vec_id % 10 ≠ 7), frozen, and the
-    * arriving batch is assigned to existing cells WITHOUT retraining
-    * ([[graft.ml.IvfIndex.append]]'s assignment, run here as the
-    * audited query). Output per cell: base occupancy (read from the
-    * persisted inverted file — ids only, the store's vectors are
-    * never rescanned; plan-asserted), batch adds, post-add share, and
-    * the x75-style balance trigger (cell > 2× uniform share ⇒ the
-    * drift signal that schedules a retrain). Scale shape: ONE scan of
-    * the batch vectors against 16 broadcast centroids + an id-only
-    * scan of the store's cell map, collapsing to |cells| rows; the
-    * whole point of the add path is that its cost scales with the
-    * batch, not the corpus. All-integer counts; shares on the
-    * pure-BIGINT [[intRoundHalfAway]]. */
-  val x109IvfAddBatch: Q = (s, d) => {
-    val path = ensureIvfBaseStore(s, d)
-    val idx = graft.ml.IvfIndex.loadCached(s, path)
-    val batch = Tables.embeddings(s, d).filter(col("vec_id") % 10 === 7)
-    val added = graft.ml.IvfIndex.assign(batch, idx.centroids)
-      .select(col("vec_id"), col("cell"))
-    val baseCnt = idx.cells.groupBy(col("cell"))
-      .agg(count(lit(1)).as("n_base"))
-    val addCnt = added.groupBy(col("cell")).agg(count(lit(1)).as("n_add"))
-    val spine = idx.centroids.select(col("cid").as("cell"))
-    val stats = spine
-      .join(baseCnt, Seq("cell"), "left")
-      .join(addCnt, Seq("cell"), "left")
-      .select(col("cell"),
-        coalesce(col("n_base"), lit(0L)).as("n_base"),
-        coalesce(col("n_add"), lit(0L)).as("n_add"))
-      .withColumn("n_total", col("n_base") + col("n_add"))
-    // |cells| rows from here on: the unpartitioned window is a
-    // 16-row driver-sized total, not a corpus sort
-    val wAll = Window.partitionBy(lit(1))
-    stats
-      .withColumn("tot", sum(col("n_total")).over(wAll))
-      .select(col("cell"), col("n_base"), col("n_add"), col("n_total"),
-        (intRoundHalfAway(col("n_add") * 10000L,
-          greatest(col("n_total"), lit(1L))).cast("double") / 1e4)
-          .as("add_share"),
-        (intRoundHalfAway(col("n_total") * 10000L, col("tot"))
-          .cast("double") / 1e4).as("total_share"),
-        (col("n_total") * 16L > col("tot") * 2L).as("over_2x"))
-      .orderBy(col("cell"))
-  }
-
-  /** X110: incremental IVF-PQ encode audit — the add path for the
-    * COMPRESSED serving store: batch vectors (vec_id % 10 = 7) are
-    * coarse-assigned, residual-encoded, and PQ-coded against the
-    * persisted store's FROZEN codebooks ([[ensureIvfPqStore]] — no
-    * Lloyd step runs here), exactly FAISS IVFPQ `add` after `train`.
-    * Because assignment is row-local given frozen codebooks, the
-    * fresh batch codes are provably identical to what a from-scratch
-    * union build assigns those ids (EngineSpec pins the equivalence
-    * row-for-row against the store's own codes). Output per
-    * (subspace, code): base vs batch code occupancy and their
-    * within-population shares — the code-distribution drift table an
-    * index owner watches (x68's PSI shape one level down): a batch
-    * whose code usage skews signals quantizer staleness before
-    * recall decays. Scale shape: one batch-sized encode against
-    * broadcast codebooks + an id-only scan of the store's codes,
-    * collapsing onto the m·k code grid.
-    *
-    * The store under audit is the BASE-ONLY twin
-    * ([[ensureIvfPqBase]], round-10 verdict item 5): its codebooks
-    * were trained with the batch slice held out, so the occupancy
-    * comparison measures genuine quantizer drift — rounds ≤ 10 read
-    * x100's full-corpus serving store here, which had seen the batch
-    * at train time and weakened the audit to a staleness signal
-    * (ADVICE r9 option 2, now closed). PlansSpec pins that the base
-    * store contains no batch id. */
-  val x110IvfPqAddBatch: Q = (s, d) => {
-    val path = ensureIvfPqBase(s, d)
-    val coarse = s.read.parquet(s"$path/coarse")
-    val pqCents = s.read.parquet(s"$path/pqcents")
-    val storeCodes = s.read.parquet(s"$path/codes")
-    val batch = Tables.embeddings(s, d).filter(col("vec_id") % 10 === 7)
-    val assigned = graft.ml.PqIndex.assign(
-      graft.ml.PqIndex.subvectors(batch, 1, 64), coarse)
-    val resEmb = assigned.as("a").join(broadcast(coarse.as("c")),
-        col("a.m") === col("c.m") && col("a.cell") === col("c.cid"))
-      .select(col("a.vec_id").as("vec_id"),
-        zip_with(col("a.sub"), col("c.ce"),
-          (x, y) => (x.cast("double") - y.cast("double")).cast("float"))
-          .as("embedding"))
-    val newCodes = graft.ml.PqIndex.encode(resEmb, pqCents)
-    // the base store holds base ids ONLY (build-time held-out)
-    val baseCnt = storeCodes
-      .groupBy(col("m"), col("code")).agg(count(lit(1)).as("n_base"))
-    val addCnt = newCodes
-      .groupBy(col("m"), col("code")).agg(count(lit(1)).as("n_add"))
-    val nb = Tables.embeddings(s, d).filter(col("vec_id") % 10 =!= 7)
-      .agg(count(lit(1)).as("tot_base"))
-    val na = Tables.embeddings(s, d).filter(col("vec_id") % 10 === 7)
-      .agg(count(lit(1)).as("tot_add"))
-    pqCents.select(col("m"), col("cid").as("code"))
-      .join(baseCnt, Seq("m", "code"), "left")
-      .join(addCnt, Seq("m", "code"), "left")
-      .crossJoin(broadcast(nb)).crossJoin(broadcast(na))
-      .select(col("m").cast("long").as("m"), col("code").cast("long").as("code"),
-        coalesce(col("n_base"), lit(0L)).as("n_base"),
-        coalesce(col("n_add"), lit(0L)).as("n_add"),
-        (intRoundHalfAway(coalesce(col("n_base"), lit(0L)) * 10000L,
-          col("tot_base")).cast("double") / 1e4).as("base_share"),
-        (intRoundHalfAway(coalesce(col("n_add"), lit(0L)) * 10000L,
-          col("tot_add")).cast("double") / 1e4).as("add_share"))
-      .orderBy(col("m"), col("code"))
-  }
-
-  /** X100: IVF-PQ composed serving query — the standard
-    * billion-vector layout end-to-end: a 16-cell full-width L2 coarse
-    * quantizer ([[graft.ml.PqIndex.trainCodebook]] with m=1 — one
-    * "subspace" spanning the vector IS an L2 IVF), RESIDUAL encoding
-    * (x − coarse centroid) through the 8×16 product codebook, and
-    * serving as probe-the-top-4-cells + asymmetric distance against
-    * the residual codes of ONLY those cells' vectors. Residual PQ is
-    * what makes the composition work: residuals are small and
-    * centered, so the same 8-byte budget quantizes them far better
-    * than raw vectors (Jégou et al. §IV). Scale shape: both
-    * codebooks are driver-pinned (16 + 128 rows); the residual table
-    * is corpus-scaled and localCheckpointed ONCE (referenced by
-    * train, encode, and cell lookup); at serving scale each query
-    * touches nprobe/nCells of the corpus and each candidate costs m
-    * LUT reads — x31's pruning and x99's compression composed.
-    * Determinism: every distance is ROUND(L2²·1e6) BIGINT (ordered
-    * folds), every ranking ties on id; residual floats are
-    * double-subtract-then-cast-float, identical in the oracle.
-    * The built index PERSISTS ([[ensureIvfPqStore]] — the x31/x92
-    * build-once contract, prebuilt in Bench's untimed warmup), so
-    * this query measures SERVING: coarse probe + band-pruned ADC.
-    * Training cost is measured where it belongs: x13 (coarse Lloyd)
-    * and x99 (PQ Lloyd). The oracle retrains everything from scratch,
-    * proving the store is bit-identical to a fresh build. */
-  private[graft] def ensureIvfPqStore(s: SparkSession, d: String): String =
-    Store.materialize("ivfpq", "v1", d, "embeddings") { path =>
-      writeIvfPq(spread(s, Tables.embeddings(s, d)), path)
-        .write.mode("overwrite").parquet(s"$path/cells")
-    }
-
-  /** The IVF-PQ build shared by the [[ensureIvfPqStore]] family: a
-    * 16-cell full-width coarse quantizer, the residual 8×16 product
-    * codebook and the residual codes, written to `path`/coarse,
-    * /pqcents and /codes. Returns the (vec_id, cell) map. */
-  private def writeIvfPq(emb: DataFrame, path: String): DataFrame = {
-    val coarse = graft.ml.PqIndex.trainCodebook(emb, m = 1, dsub = 64)
-    val assigned = graft.ml.PqIndex.assign(
-      graft.ml.PqIndex.subvectors(emb, 1, 64), coarse)
-    // residuals are corpus-scaled and feed train, encode, AND the
-    // cell map — checkpoint once, cluster-side
-    val resEmb = assigned.as("a").join(broadcast(coarse.as("c")),
-        col("a.m") === col("c.m") && col("a.cell") === col("c.cid"))
-      .select(col("a.vec_id").as("vec_id"), col("a.cell").as("cell"),
-        zip_with(col("a.sub"), col("c.ce"),
-          (x, y) => (x.cast("double") - y.cast("double")).cast("float"))
-          .as("embedding"))
-      .localCheckpoint()
-    val pqCents = graft.ml.PqIndex.trainCodebook(
-      resEmb.select(col("vec_id"), col("embedding")))
-    val codes = graft.ml.PqIndex.encode(
-      resEmb.select(col("vec_id"), col("embedding")), pqCents)
-    coarse.coalesce(1).write.mode("overwrite").parquet(s"$path/coarse")
-    pqCents.coalesce(1).write.mode("overwrite").parquet(s"$path/pqcents")
-    codes.write.mode("overwrite").parquet(s"$path/codes")
-    resEmb.select(col("vec_id"), col("cell"))
-  }
-
-  /** x110's BASE-ONLY twin of [[ensureIvfPqStore]] (round-10 verdict
-    * item 5, closing ADVICE r9 option 2 for real): identical build —
-    * coarse quantizer, residual PQ codebooks, codes — but trained and
-    * encoded on the base slice ONLY (vec_id % 10 ≠ 7), x109's
-    * held-out pattern, so the x110 drift audit measures the batch
-    * against a quantizer that provably never saw it. Seeds follow
-    * [[graft.ml.PqIndex.trainCodebook]]'s vec_id < 16 rule on the
-    * BASE relation (id 7 is batch → 15 coarse cells; the oracle
-    * mirrors the same seed set). The full-corpus store stays what
-    * x100/x129 serve from; this store exists for the audit. */
-  private[graft] def ensureIvfPqBase(s: SparkSession, d: String): String =
-    Store.materialize("ivfpqbase", "v1", d, "embeddings") { path =>
-      writeIvfPq(spread(s, Tables.embeddings(s, d)
-        .filter(col("vec_id") % 10 =!= 7)), path)
-    }
-
-  /** x100/x129's shared ADC scoring stage over the persisted IVF-PQ
-    * store: (qid, nid, dist_q) for every code vector in the query's
-    * top-4 probed cells — everything up to (not including) the rank
-    * cut, so the plain server (x100) and the refine server (x129)
-    * provably score identically. */
-  private def ivfPqAdc(s: SparkSession, d: String): DataFrame = {
-    val path = ensureIvfPqStore(s, d)
-    val coarse = s.read.parquet(s"$path/coarse")
-    val pqCents = s.read.parquet(s"$path/pqcents")
-    val codes = s.read.parquet(s"$path/codes")
-    val cells = s.read.parquet(s"$path/cells")
-    val queries = Tables.embeddings(s, d).filter(col("vec_id") < 5)
-    val probes = queries
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      .crossJoin(broadcast(coarse))
-      .withColumn("dq", graft.ml.PqIndex.l2q(col("qe"), col("ce")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("dq"), col("cid"))))
-      .filter(col("rk") <= 4)
-      .select(col("qid"), col("cid").as("cell"),
-        zip_with(col("qe"), col("ce"),
-          (x, y) => (x.cast("double") - y.cast("double")).cast("float"))
-          .as("qr"))
-    val qrsub = probes
-      .select(col("qid"), col("cell"), col("qr"),
-        explode(sequence(lit(0), lit(7))).as("m"))
-      .select(col("qid"), col("cell"), col("m"),
-        slice(col("qr"), col("m") * 8 + 1, lit(8)).as("qsub"))
-    val nce = codes.join(broadcast(pqCents),
-        codes("m") === pqCents("m") && codes("code") === pqCents("cid"))
-      .select(codes("vec_id").as("nid"), codes("m").as("m"),
-        pqCents("ce").as("nce"))
-      .join(cells.select(col("vec_id").as("nid"), col("cell")), Seq("nid"))
-    nce.join(broadcast(qrsub), Seq("cell", "m"))
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("dq", graft.ml.PqIndex.l2q(col("qsub"), col("nce")))
-      .groupBy(col("qid"), col("nid"))
-      .agg(sum(col("dq")).as("dist_q"))
-  }
-
-  val x100IvfPqQuery: Q = (s, d) =>
-    ivfPqAdc(s, d)
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("dist_q"), col("nid"))))
-      .filter(col("rk") <= 10)
-      .select(col("qid"), col("nid"), col("dist_q"),
-        col("rk").cast("int").as("rk"))
-      .orderBy(col("qid"), col("rk"))
-
-  /** X129: two-stage ANN serving with exact re-rank (FAISS's
-    * IndexRefine — the production default wherever PQ serves): the
-    * ADC stage prunes to a 16-candidate shortlist per query (cheap,
-    * 8-byte codes), then the ORIGINAL vectors of only that shortlist
-    * are fetched (a doc-keyed join on ≤16·|queries| ids — the store's
-    * full-precision copy is touched shortlist-sized, never
-    * cell-sized) and exact L2 re-ranks the top 4. Quantization noise
-    * that reorders near-ties inside the shortlist is exactly what
-    * this stage exists to undo; EngineSpec pins refine recall@4 ≥
-    * plain-ADC recall@4 against brute-force truth. Distances on the
-    * ROUND(L2²·1e6) BIGINT contract throughout. */
-  val x129AdcRerank: Q = (s, d) => {
-    val short = ivfPqAdc(s, d)
-      .withColumn("ark", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("dist_q"), col("nid"))))
-      .filter(col("ark") <= 16)
-      .select(col("qid"), col("nid"))
-    val emb = Tables.embeddings(s, d)
-    short
-      .join(emb.select(col("vec_id").as("qid"), col("embedding").as("qe")),
-        Seq("qid"))
-      .join(emb.select(col("vec_id").as("nid"), col("embedding").as("ne")),
-        Seq("nid"))
-      .withColumn("dist_q", graft.ml.PqIndex.l2q(col("qe"), col("ne")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("dist_q"), col("nid"))))
-      .filter(col("rk") <= 4)
-      .select(col("qid"), col("nid"), col("dist_q"),
-        col("rk").cast("int").as("rk"))
-      .orderBy(col("qid"), col("rk"))
-  }
-
-  /** X114: OPQ-composed serving query — x100's IVF-PQ serving stack
-    * run against the OPQ-ROTATED store ([[ensureOpqPqStore]]): the
-    * verdict's "rotation composes with the serving store" line made
-    * executable. The query vectors are rotated with the PERSISTED
-    * matrix (read back from the store — the serving contract: one
-    * frozen rotation for corpus and queries alike, its 64×64 doubles
-    * driver-pinned like any codebook), then coarse-probed top-4
-    * cells and ADC-scored against the residual codes of only those
-    * cells — byte-for-byte x100's plan on the rotated geometry.
-    * Store prebuilt untimed ([[prebuildCaches]]); the oracle
-    * recomputes rotation AND both codebooks from scratch, proving
-    * the persisted composition equals a fresh build. */
-  val x114OpqServe: Q = (s, d) => {
-    val path = ensureOpqPqStore(s, d)
-    val rotRows = s.read.parquet(s"$path/rot").orderBy(col("o"))
-      .collect().map(_.getSeq[Double](1).toArray)
-    val coarse = s.read.parquet(s"$path/coarse")
-    val pqCents = s.read.parquet(s"$path/pqcents")
-    val codes = s.read.parquet(s"$path/codes")
-    val cells = s.read.parquet(s"$path/cells")
-    val queries = Tables.embeddings(s, d).filter(col("vec_id") < 5)
-      .select(col("vec_id"),
-        graft.ml.Opq.rotateCol(col("embedding"), rotRows.toSeq).as("embedding"))
-    val probes = queries
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      .crossJoin(broadcast(coarse))
-      .withColumn("dq", graft.ml.PqIndex.l2q(col("qe"), col("ce")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("dq"), col("cid"))))
-      .filter(col("rk") <= 4)
-      .select(col("qid"), col("cid").as("cell"),
-        zip_with(col("qe"), col("ce"),
-          (x, y) => (x.cast("double") - y.cast("double")).cast("float"))
-          .as("qr"))
-    val qrsub = probes
-      .select(col("qid"), col("cell"), col("qr"),
-        explode(sequence(lit(0), lit(7))).as("m"))
-      .select(col("qid"), col("cell"), col("m"),
-        slice(col("qr"), col("m") * 8 + 1, lit(8)).as("qsub"))
-    val nce = codes.join(broadcast(pqCents),
-        codes("m") === pqCents("m") && codes("code") === pqCents("cid"))
-      .select(codes("vec_id").as("nid"), codes("m").as("m"),
-        pqCents("ce").as("nce"))
-      .join(cells.select(col("vec_id").as("nid"), col("cell")), Seq("nid"))
-    nce.join(broadcast(qrsub), Seq("cell", "m"))
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("dq", graft.ml.PqIndex.l2q(col("qsub"), col("nce")))
-      .groupBy(col("qid"), col("nid"))
-      .agg(sum(col("dq")).as("dist_q"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("dist_q"), col("nid"))))
-      .filter(col("rk") <= 10)
-      .select(col("qid"), col("nid"), col("dist_q"),
-        col("rk").cast("int").as("rk"))
-      .orderBy(col("qid"), col("rk"))
-  }
-
-  /** X101: PQ codebook health card — the per-subspace numbers an ANN
-    * owner reads before trusting x99/x100's serving copy: cells
-    * actually used (Lloyd can strand empty cells), code-distribution
-    * entropy in bits (low entropy = the subspace wastes its 4 bits),
-    * and mean quantization distortion (the Σ‖x_m − c‖² that ADC error
-    * is made of — Jégou's MSE decomposes by subspace). The x75
-    * IVF-balance audit one level down. Everything integer/quantized:
-    * counts exact, entropy on the x55 quantized-log recipe, total
-    * distortion an exact BIGINT sum of the assignment's own
-    * ROUND(L2²·1e6) distances. One scan of the persisted store's
-    * codes + a (m, code)-keyed aggregation onto m·k rows. */
-  val x101PqHealth: Q = (s, d) => {
-    val path = ensureIvfPqStore(s, d)
-    val codes = s.read.parquet(s"$path/codes")
-    val cents = s.read.parquet(s"$path/pqcents")
-    val res = s.read.parquet(s"$path/cells")
-      .join(s.read.parquet(s"$path/coarse")
-          .select(col("cid").as("cell"), col("ce").as("cce")),
-        Seq("cell"))
-      .join(Tables.embeddings(s, d), Seq("vec_id"))
-      .select(col("vec_id"),
-        zip_with(col("embedding"), col("cce"),
-          (x, y) => (x.cast("double") - y.cast("double")).cast("float"))
-          .as("r"))
-    val dist = graft.ml.PqIndex.subvectors(
-        res.select(col("vec_id"), col("r").as("embedding")), 8, 8)
-      .join(codes, Seq("vec_id", "m"))
-      .join(broadcast(cents.select(col("m").as("cm"), col("cid"),
-          col("ce"))),
-        col("m") === col("cm") && col("code") === col("cid"))
-      .select(col("vec_id"), col("m"), col("code"),
-        graft.ml.PqIndex.l2q(col("sub"), col("ce")).as("dq"))
-    val perCode = dist.groupBy(col("m"), col("code"))
-      .agg(count(lit(1)).as("c"), sum(col("dq")).as("sd"))
-    perCode.groupBy(col("m"))
-      .agg(count(lit(1)).as("n_used"),
-        sum(col("c")).as("n"),
-        sum(col("sd")).as("dist_total_q"),
-        sum(col("c") * round(log(col("c").cast("double")) * 1e6, 0)
-          .cast("long")).as("clogc_q"))
-      .select(col("m").cast("long").as("m"), col("n_used"),
-        // H = log2(n) − (Σ c·ln c)/(n·ln 2): quantized-log entropy in
-        // bits, order-free integer sums (the x55 recipe)
-        (((round(log(col("n").cast("double")) * 1e6, 0).cast("long")
-          * col("n") - col("clogc_q")).cast("double")
-          / (col("n").cast("double") * 1e6)) / math.log(2.0)).as("entropy_bits"),
-        (col("dist_total_q").cast("double")
-          / (col("n").cast("double") * 1e6)).as("mse"))
-      .orderBy(col("m"))
-  }
-
-  /** X102: count-min-sketch heavy hitters — the streaming-memory
-    * frequency sketch (Cormode & Muthukrishnan) next to exact truth,
-    * the a20b/x76 sketch-twin contract for the COUNT family: a
-    * d=4 × w=1024 CMS is built from the same corpus scan as the
-    * exact counts (each row of the sketch is a (row, md5-bucket)
-    * integer aggregation — at 100 TB the 4·1024 counters are the
-    * bounded state a stream or a merge tree carries, vs the unbounded
-    * exact vocabulary), then the top-20 exact tokens are reported
-    * with their CMS estimate (min over rows of the bucket counters)
-    * and the one-sided guarantee `cms ≥ exact` as a Spark-evaluated
-    * boolean — a violated bound means the sketch is WRONG, not
-    * drifted. All-integer; the only hash is the md5-prefix bucket
-    * both engines already share. */
-  val x102CmsHeavyHitters: Q = (s, d) => {
-    val toks = spread(s, Tables.documents(s, d))
-      .select(explode(wsTokens(col("text"))).as("w"))
-    val exact = toks.groupBy(col("w")).agg(count(lit(1)).as("c_exact"))
-    // 4 hash rows in ONE scan (generator over hrow, the oracle's
-    // UNNEST shape): bucket_r(w) = md5₃₂("r:" ∥ w) mod 1024
-    val rows = toks
-      .select(col("w"), explode(sequence(lit(0), lit(3))).as("hrow"))
-      .select(col("hrow"),
-        pmod(graft.dedup.NearDup.md5Hash32(
-          concat(col("hrow").cast("string"), lit(":"), col("w"))),
-          lit(1024L)).as("bucket"))
-      .groupBy(col("hrow"), col("bucket")).agg(count(lit(1)).as("cnt"))
-    // top-20 via orderBy+limit (TakeOrderedAndProject — no global
-    // single-partition window sort over the vocabulary, which at
-    // 100 TB is itself a huge relation); the rank window then runs
-    // over 20 rows only
-    val top = exact.orderBy(col("c_exact").desc, col("w")).limit(20)
-      .withColumn("rk", row_number().over(
-        Window.orderBy(col("c_exact").desc, col("w"))))
-    val est = top.select(col("w"), col("c_exact"), col("rk"),
-        explode(sequence(lit(0), lit(3))).as("hrow"))
-      .withColumn("bucket",
-        pmod(graft.dedup.NearDup.md5Hash32(
-          concat(col("hrow").cast("string"), lit(":"), col("w"))), lit(1024L)))
-      .join(broadcast(rows), Seq("hrow", "bucket"))
-      .groupBy(col("w"), col("c_exact"), col("rk"))
-      .agg(min(col("cnt")).as("c_cms"))
-    est.select(col("w"), col("c_exact"), col("c_cms"),
-        (col("c_cms") >= col("c_exact")).as("within_bound"),
-        col("rk").cast("long").as("rk"))
-      .orderBy(col("rk"))
-  }
-
-  /** X103: span corruption (T5/UL2 objective preparation) — the
-    * masking transform a denoising-pretraining pipeline applies to
-    * every document: fixed 3-token blocks are selected with p=15% by
-    * deterministic hash (md5₃₂(doc_id:block) mod 100 < 15 — no RNG
-    * state, reproducible across engines, reruns, and shards: the x61
-    * selector applied to spans), each selected block is replaced by
-    * one `<extra_id_k>` sentinel (k = rank of the masked block, the
-    * T5 numbering), and the target sequence is the sentinels with
-    * their masked-out tokens. Entirely ROW-LOCAL: blocks, flags,
-    * sentinel ranks (a prefix count over the flag array), the
-    * masked/target rebuilds, and the counts are all higher-order
-    * array functions in one projection — no shuffle but the output
-    * sort, which is the whole point at 100 TB (objective prep runs
-    * at scan speed on the way to the trainer). Masked/target text
-    * leave as md5 (the x17/x87 checksum convention). */
-  val x103SpanCorruption: Q = (s, d) => {
-    val toks = wsTokens(col("text"))
-    val nblk = call_function("div", size(toks).cast("long") + 2L, lit(3L))
-    val blocks = sequence(lit(0L), nblk - 1)
-    def flagOf(b: Column) =
-      pmod(graft.dedup.NearDup.md5Hash32(
-        concat(col("doc_id").cast("string"), lit(":"), b.cast("string"))),
-        lit(100L)) < 15
-    val flags = transform(blocks, b => flagOf(b))
-    val ranks = transform(blocks, b =>
-      aggregate(slice(flags, lit(1), b.cast("int")), lit(0),
-        (acc, x) => acc + when(x, 1).otherwise(0)))
-    def blockToks(b: Column) = slice(toks, (b * 3 + 1).cast("int"), lit(3))
-    def sentinel(b: Column) = concat(lit("<extra_id_"),
-      element_at(ranks, (b + 1).cast("int")).cast("string"), lit(">"))
-    val pieces = transform(blocks, b =>
-      when(element_at(flags, (b + 1).cast("int")), array(sentinel(b)))
-        .otherwise(blockToks(b)))
-    val tpieces = transform(blocks, b =>
-      when(element_at(flags, (b + 1).cast("int")),
-        concat(array(sentinel(b)), blockToks(b)))
-        .otherwise(array().cast("array<string>")))
-    val input = array_join(flatten(pieces), " ")
-    val target = array_join(flatten(tpieces), " ")
-    spread(s, Tables.documents(s, d))
-      .select(col("doc_id"),
-        size(toks).cast("long").as("n_tok"),
-        nblk.as("n_blocks"),
-        size(filter(flags, x => x)).cast("long").as("n_masked_blocks"),
-        (size(flatten(tpieces))
-          - size(filter(flags, x => x))).cast("long").as("n_masked_tok"),
-        md5(input).as("input_md5"),
-        md5(target).as("target_md5"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** X104: cross-modal pairing-integrity audit — the join-coverage
-    * check a multimodal (caption ↔ embedding/image) corpus runs
-    * before training: per source, how many documents actually HAVE
-    * their paired vector, and how many vectors are orphaned (their
-    * document was filtered away upstream). The fixture pairs ids 1:1,
-    * so a failed embedding shard is SIMULATED by withholding the
-    * ~10% of vectors with md5₃₂(vec_id) ≡ 7 (mod 10) (the x62
-    * plant-the-failure convention; hash-based so the hole spreads
-    * across every source — the fixture's id↔source mapping would
-    * make a raw id modulus all-or-nothing per source) — the audit
-    * must report exactly that hole, per source, plus the
-    * orphaned-vector count. One broadcast-ably small presence join (ids only, no
-    * payloads move), per-source BIGINT-ratio coverage. The etl3
-    * join-coverage discipline applied to modality pairing. */
-  val x104PairingAudit: Q = (s, d) => {
-    // the paired-vector id table (with its hash-spread coverage hole)
-    // is the STAGED derived fixture — see [[ensurePlantedFixtures]];
-    // ids-only scan, the oracle recomputes the hole from the base table
-    val vecs = s.read
-      .parquet(s"${ensurePlantedFixtures(s, d)}/vecs_holed")
-      .select(col("vec_id").as("doc_id"), lit(1L).as("has_vec"))
-    val docs = Tables.documents(s, d).select(col("doc_id"), col("source"))
-    val perSource = docs.join(vecs, Seq("doc_id"), "left")
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(coalesce(col("has_vec"), lit(0L))).as("n_paired"))
-      .select(col("source"), col("n_docs"), col("n_paired"),
-        (col("n_docs") - col("n_paired")).as("n_missing_vec"),
-        (intRoundHalfAway(col("n_paired") * 10000L, col("n_docs"))
-          .cast("double") / 1e4).as("coverage"))
-    val orphans = vecs.join(docs.select(col("doc_id")), Seq("doc_id"),
-        "left_anti")
-      .agg(count(lit(1)).as("n_orphan_vecs"))
-    perSource.crossJoin(broadcast(orphans))
-      .orderBy(col("source"))
-  }
-
-  /** X105: dedup threshold-policy sweep — how much of the corpus has
-    * at least one near-duplicate at each Jaccard threshold 0.3..0.9:
-    * the table a data lead reads to CHOOSE the production threshold
-    * (x59 prices the mass removed at one threshold; this shows the
-    * whole curve, on the same prefix-enriched corpus x62/x91 use so
-    * the mid thresholds are populated). Docs-with-a-neighbor is the
-    * policy number (the upper bound on removal before survivor
-    * selection), so no per-threshold closure is needed: ONE banded
-    * candidate scan ([[graft.dedup.NearDup.lshCandidateJaccard]]),
-    * the pair table exploded over the 7 thresholds, one distinct-doc
-    * count each — the sweep costs one LSH pass, not seven dedup
-    * runs. */
-  val x105ThresholdSweep: Q = (s, d) =>
-    graft.dedup.NearDup.lshCandidateJaccard(lshEvalCorpus(s, d))
-      .filter(col("jaccard") >= 0.3)
-      .select(col("jaccard"),
-        explode(array(col("id_a"), col("id_b"))).as("doc_id"))
-      .select(col("doc_id"), col("jaccard"),
-        explode(sequence(lit(3), lit(9))).as("t10"))
-      .filter(col("jaccard") >= col("t10").cast("double") / 10)
-      .groupBy(col("t10"))
-      .agg(countDistinct(col("doc_id")).as("n_docs_dup"))
-      .crossJoin(broadcast(
-        lshEvalCorpus(s, d).agg(count(lit(1)).as("n_total"))))
-      .select((col("t10").cast("double") / 10).as("threshold"),
-        col("n_docs_dup"), col("n_total"),
-        (intRoundHalfAway(col("n_docs_dup") * 10000L, col("n_total"))
-          .cast("double") / 1e4).as("share"))
-      .orderBy(col("threshold"))
-
-  /** X95: mixture temperature sweep — x50's sqrt-mixture generalized
-    * to the sampling-temperature grid every multilingual/multi-source
-    * run tunes (UniMax/mT5's α: p_i ∝ tok_i^α, α→0 flattens toward
-    * uniform, α=1 is proportional). The grid is DYADIC BY DESIGN —
-    * α ∈ {1/4, 1/2, 3/4, 1} via sqrt compositions (√, √∘√, √·√∘√),
-    * and IEEE sqrt is correctly-rounded-exact, so every weight is
-    * bit-identical across engines with no libm pow/exp anywhere.
-    * Denominators fold in SOURCE ORDER on the driver, mirrored by
-    * the oracle's `list_sum(list(... ORDER BY source))` (the x50
-    * ordered-double-sum contract). |sources|×4 rows — the planning
-    * table is driver-sized at any corpus scale; the one corpus scan
-    * is the token count. */
-  val x95TemperatureSweep: Q = (s, d) => {
-    import s.implicits._
-    val rows = Tables.documents(s, d).groupBy(col("source"))
-      .agg(sum(tokenCount(col("text"))).as("tok"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
-    val budget = rows.map(_._2).sum
-    def w(t: Double, a: Double): Double = a match {
-      case 0.25 => math.sqrt(math.sqrt(t))
-      case 0.5  => math.sqrt(t)
-      case 0.75 => math.sqrt(t) * math.sqrt(math.sqrt(t))
-      case _    => t
-    }
-    val alphas = Seq(0.25, 0.5, 0.75, 1.0)
-    val den = alphas.map(a =>
-      a -> rows.foldLeft(0.0)((acc, r) => acc + w(r._2.toDouble, a))).toMap
-    val tokD = col("tok").cast("double")
-    val wCol = when(col("alpha") === 0.25, sqrt(sqrt(tokD)))
-      .when(col("alpha") === 0.5, sqrt(tokD))
-      .when(col("alpha") === 0.75, sqrt(tokD) * sqrt(sqrt(tokD)))
-      .otherwise(tokD)
-    val dnCol = when(col("alpha") === 0.25, lit(den(0.25)))
-      .when(col("alpha") === 0.5, lit(den(0.5)))
-      .when(col("alpha") === 0.75, lit(den(0.75)))
-      .otherwise(lit(den(1.0)))
-    rows.toSeq.toDF("source", "tok")
-      .crossJoin(alphas.toDF("alpha"))
-      .select(col("source"), col("tok"), col("alpha"),
-        round(wCol / dnCol, 6).as("p_sample"),
-        round(lit(budget).cast("double") * (wCol / dnCol) / tokD, 6)
-          .as("epochs"))
-      .orderBy(col("source"), col("alpha"))
-  }
-
-  /** X96: sequence-length histogram — per-source doc counts and token
-    * mass in power-of-two length buckets, the planning table behind
-    * x25's packing (bucket mix decides padding waste and pack depth)
-    * and behind max-length truncation policy. The log2 bucket is
-    * INTEGER-EXACT in both engines: `length(bin(n)) − 1` (binary
-    * digit count), no floating log anywhere — floor(ln n / ln 2)
-    * misrounds at exact powers of two. One scan, |sources|×buckets
-    * rows, map-side combinable. */
-  val x96LengthHistogram: Q = (s, d) =>
-    Tables.documents(s, d)
-      .select(col("source"), tokenCount(col("text")).cast("long").as("n_tok"))
-      .withColumn("bucket",
-        (length(bin(greatest(col("n_tok"), lit(1L)))) - 1).cast("long"))
-      .groupBy(col("source"), col("bucket"))
-      .agg(count(lit(1)).as("n"), sum(col("n_tok")).as("tok_mass"))
-      .withColumn("n_src",
-        sum(col("n")).over(Window.partitionBy(col("source"))))
-      .select(col("source"), col("bucket"), col("n"), col("tok_mass"),
-        (intRoundHalfAway(col("n") * 10000L, col("n_src"))
-          .cast("double") / 1e4).as("share"))
-      .orderBy(col("source"), col("bucket"))
-
-  /** X91: LSH candidate-precision audit — the cost side of the
-    * tuning loop x62 (recall side) and x62b (model) leave open: the
-    * per-Jaccard-band distribution of everything the band join PULLS
-    * IN, before any threshold. Candidates below the production
-    * threshold (J < 0.5) are pure wasted verification work — their
-    * measured share is the on-data check of x62b's `catch_lo`
-    * S-curve pricing, on the same prefix-copy corpus x62 uses for
-    * recall. Shape: [[graft.dedup.NearDup.lshCandidateJaccard]]
-    * (band-bucketed join, shingle verify inline on the colliding
-    * sliver only), collapsing to a ≤10-row band grid; the share
-    * window runs on that grid, never the corpus. */
-  val x91LshPrecision: Q = (s, d) =>
-    graft.dedup.NearDup.lshCandidateJaccard(lshEvalCorpus(s, d))
-      // zero-shingle-overlap candidates (possible only via empty
-      // shingle sets or raw hash collision) have NaN Jaccard and no
-      // row in the oracle's intersection join — excluded on both
-      // sides by the same predicate
-      .filter(col("jaccard") > 0)
-      .withColumn("band",
-        least(floor(col("jaccard") * 10) / 10, lit(0.9)))
-      .groupBy(col("band")).agg(count(lit(1)).as("n_cand"))
-      .withColumn("n_total", sum(col("n_cand")).over(
-        Window.rowsBetween(Window.unboundedPreceding,
-          Window.unboundedFollowing)))
-      .select(col("band"), col("n_cand"),
-        (intRoundHalfAway(col("n_cand") * 10000L, col("n_total"))
-          .cast("double") / 1e4).as("share"),
-        (col("band") < 0.5).as("below_threshold"))
-      .orderBy(col("band"))
-
-  /** X63: windowed PMI co-occurrence — top word pairs by pointwise
-    * mutual information within a 5-token window (offsets 1..4), the
-    * corpus statistic behind phrase detection, tokenizer merge rules,
-    * and collocation-aware augmentation. Shape: the pair space is
-    * generated ROW-LOCALLY by chained generators (position × offset —
-    * the x46 pattern, never a self-join of the exploded corpus), the
-    * (w1,w2) and unigram counts are map-side-combinable vocabulary-
-    * sized aggregates, the two unigram attachments AQE-broadcast
-    * (x30/x39 precedent), and the top-k is TakeOrdered over the
-    * bounded pair table — no full-sort shuffle. Determinism: counts
-    * are exact integers, PMI = round(ln(c·N·M²-ratio)·1e4) on the
-    * quantized-log recipe, and the (pmi_q desc, w1, w2) total order
-    * makes the limit-100 cut exact in both engines. Pairs are
-    * unordered (least/greatest normalization) and self-pairs
-    * (repeated word in window) are kept — they signal repetition. */
-  val x63PmiCooccurrence: Q = (s, d) => {
-    val toks = spread(s, Tables.documents(s, d))
-      .select(col("doc_id"), wsTokens(col("text")).as("toks"))
-      .withColumn("n", size(col("toks")))
-    // pair generation is ONE row-local projection (4 zip_with'd shifted
-    // slices concatenated) + a single explode of the finished (w1, w2)
-    // structs: the earlier two-stage explode chain carried the whole
-    // token array through 4·n generated rows per doc, and copying that
-    // array dominated the query (round-10 verdict item 7)
-    val pairCols = (1 to 4).map { k =>
-      zip_with(
-        slice(col("toks"), lit(1), greatest(col("n") - k, lit(0))),
-        slice(col("toks"), lit(k + 1), greatest(col("n") - k, lit(0))),
-        (a, b) => struct(least(a, b).as("w1"), greatest(a, b).as("w2")))
-    }
-    val pairs = toks
-      .select(explode(concat(pairCols: _*)).as("p"))
-      .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
-      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c_pair"))
-    val uni = toks
-      .select(explode(col("toks")).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("c_w"))
-    val nPairs = pairs.agg(sum(col("c_pair")).as("n_pairs"))
-    val mToks = uni.agg(sum(col("c_w")).as("m_toks"))
-    // df-threshold applied BEFORE the unigram joins (round-10 verdict
-    // item 7): the REPORTED c_pair ≥ 5 cut already defines the output,
-    // so filtering the pair table first shrinks both join probes for
-    // free; n_pairs (the PMI denominator) still counts the full mass
-    pairs.filter(col("c_pair") >= 5)
-      .join(uni.select(col("w").as("w1"), col("c_w").as("c1")), Seq("w1"))
-      .join(uni.select(col("w").as("w2"), col("c_w").as("c2")), Seq("w2"))
-      .crossJoin(broadcast(nPairs)).crossJoin(broadcast(mToks))
-      .withColumn("pmi_q",
-        round(log((col("c_pair").cast("double") / col("n_pairs").cast("double"))
-          / ((col("c1").cast("double") / col("m_toks").cast("double"))
-            * (col("c2").cast("double") / col("m_toks").cast("double"))))
-          * 1e4, 0).cast("long"))
-      .select(col("w1"), col("w2"), col("c_pair"),
-        (col("pmi_q").cast("double") / 1e4).as("pmi"))
-      .orderBy(col("pmi").desc, col("w1"), col("w2"))
-      .limit(100)
-  }
-
-  /** Core of [[x64BackoffLogppl]], factored over explicit (docs,
-    * train) relations so EngineSpec can pin branch semantics on a
-    * crafted micro-corpus: stupid-backoff trigram scoring (Brants et
-    * al. 2007, "Large Language Models in Machine Translation") —
-    * S(wᵢ|wᵢ₋₂wᵢ₋₁) = c₃/c₂ if the trigram was seen in `train`, else
-    * 0.4·c₂'/c₁ if the (wᵢ₋₁,wᵢ) bigram was, else 0.4²·add-1 unigram.
-    * Every branch CONDITION is an integer null-check and every branch
-    * VALUE an exact-integer ratio (0.4 = 2/5, 0.16 = 4/25 — rational,
-    * so no double constant enters the quotient), which is what makes
-    * a cross-engine oracle possible for a backoff LM: one ln per
-    * step, quantized at 1e-4 (x39 recipe), order-free integer sum,
-    * pure-BIGINT mean rounding. */
-  private[graft] def backoffTrigramScores(
-      docs: DataFrame, train: DataFrame): DataFrame = {
-    val tk = docs.select(col("doc_id"), wsTokens(col("text")).as("toks"))
-      .withColumn("n", size(col("toks")))
-    val ttk = train.select(wsTokens(col("text")).as("toks"))
-    val uni = ttk.select(explode(col("toks")).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("c1"))
-    val tot = uni.agg(sum(col("c1")).as("nt"), count(lit(1)).as("v"))
-    val big = ttk.select(explode(allShinglesOfToks(col("toks"), 2)).as("g"))
-      .groupBy(col("g")).agg(count(lit(1)).as("c2"))
-    val tri = ttk.select(explode(allShinglesOfToks(col("toks"), 3)).as("g"))
-      .groupBy(col("g")).agg(count(lit(1)).as("c3"))
-    val steps = tk.filter(col("n") >= 3)
-      .select(col("doc_id"), col("toks"),
-        explode(sequence(lit(3), col("n"))).as("i"))
-      .select(col("doc_id"),
-        concat_ws(" ", element_at(col("toks"), col("i") - 2),
-          element_at(col("toks"), col("i") - 1),
-          element_at(col("toks"), col("i"))).as("g3"),
-        concat_ws(" ", element_at(col("toks"), col("i") - 2),
-          element_at(col("toks"), col("i") - 1)).as("g2ctx"),
-        concat_ws(" ", element_at(col("toks"), col("i") - 1),
-          element_at(col("toks"), col("i"))).as("g2"),
-        element_at(col("toks"), col("i") - 1).as("wctx"),
-        element_at(col("toks"), col("i")).as("w"))
-    steps
-      .join(tri.select(col("g").as("g3"), col("c3")), Seq("g3"), "left")
-      .join(big.select(col("g").as("g2ctx"), col("c2").as("c2ctx")),
-        Seq("g2ctx"), "left")
-      .join(big.select(col("g").as("g2"), col("c2").as("c2b")),
-        Seq("g2"), "left")
-      .join(uni.select(col("w").as("wctx"), col("c1").as("c1ctx")),
-        Seq("wctx"), "left")
-      .join(uni.select(col("w"), col("c1").as("c1w")), Seq("w"), "left")
-      .crossJoin(broadcast(tot))
-      // a seen trigram implies its context bigram was seen (c2ctx ≥
-      // c3 ≥ 1), a seen backoff bigram implies its context unigram
-      // was (c1ctx ≥ c2b ≥ 1) — so no branch ever divides by null/0;
-      // fully-unknown words take the add-1 smoothed unigram floor
-      .withColumn("lp_q", round(-log(
-        when(col("c3").isNotNull,
-          col("c3").cast("double") / col("c2ctx"))
-          .when(col("c2b").isNotNull,
-            (col("c2b") * 2).cast("double") / (col("c1ctx") * 5))
-          .otherwise(((coalesce(col("c1w"), lit(0L)) + 1) * 4).cast("double")
-            / ((col("nt") + col("v")) * 25))) * 1e4, 0).cast("long"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_steps"), sum(col("lp_q")).as("s_lp"))
-      .select(col("doc_id"), col("n_steps"),
-        (intRoundHalfAway(col("s_lp"), col("n_steps")).cast("double") / 1e4)
-          .as("ppl3_proxy"))
-  }
-
-  /** X64: stupid-backoff TRIGRAM log-perplexity — closes the r6
-    * "proxy LM" gap one more order toward CCNet's KenLM: unlike
-    * x39/x40 (whose same-corpus MLE counts make every step a SEEN
-    * event), the LM here trains on the `lang = 'en'` slice (the
-    * curation target, the x42 convention) and scores EVERY doc, so
-    * the backoff branches fire for real on out-of-domain text and
-    * the score separates en from non-en — the actual CCNet filter
-    * shape (train on target domain, threshold the scored corpus).
-    * Scale shape: the trigram table is the largest relation after the
-    * corpus itself (≈ unique-trigram count) — its join, like the two
-    * bigram attachments, is a shuffle hash join on the gram with both
-    * sides partial-aggregated; the unigram table AQE-broadcasts
-    * (x39/x40 precedent); step generation is row-local chained
-    * generators (x63 pattern). Docs with <3 tokens have no trigram
-    * step and drop out (inner semantics, as x40). */
-  val x64BackoffLogppl: Q = (s, d) => {
-    val docs = Tables.documents(s, d)
-    backoffTrigramScores(docs, docs.filter(col("lang") === "en"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Interpolated Kneser-Ney trigram scores (Kneser & Ney 1995; Chen
-    * & Goodman 1998's Interpolated KN) — the model class CCNet's
-    * KenLM filter actually uses, one order up from x64's stupid
-    * backoff. Absolute discount D = 3/4 at every level; the backoff
-    * distributions are CONTINUATION counts (type counts N1+(..), not
-    * token counts) — the property that distinguishes KN from plain
-    * absolute discounting:
-    *
-    *   P₃(w|uv) = max(c(uvw)−D,0)/Σc(uv·) + D·N1+(uv·)/Σc(uv·)·P₂(w|v)
-    *   P₂(w|v)  = max(N1+(·vw)−D,0)/N1+(·v·) + D·N1+(v·)/N1+(·v·)·P₁(w)
-    *   P₁(w)    = max(N1+(·w)−D,0)/N1+(··) + D·V₁/N1+(··) · 1/(V+1)
-    *
-    * (the base case interpolates toward a uniform 1/(V+1) so unknown
-    * words keep nonzero mass; each level's discount mass exactly
-    * funds its interpolation weight, so every level sums to 1 over
-    * the open vocabulary). Unseen contexts back off whole levels:
-    * Σc(uv·)=0 → P₂; N1+(·v·)=0 → P₁.
-    *
-    * Determinism (the x64 recipe, one step further): D = 3/4 is
-    * RATIONAL, so multiplying each level through by 4 turns every
-    * max() and every count product into exact BIGINT arithmetic —
-    * max(4c−3,0) — and each level is ONE double division plus one
-    * fused a + b·p shape, written in the identical order in the
-    * DuckDB oracle; ln quantized at 1e-4, order-free integer sum,
-    * pure-BIGINT mean rounding.
-    *
-    * Scale shape: identical join graph to x64 — the trigram-derived
-    * count tables (types by (u,v,w) → (u,v) / (v,w) → (v)) are
-    * partial-aggregated shuffles no larger than the trigram table
-    * itself; scoring is five shuffle hash joins on gram keys plus one
-    * broadcast of the 1-row scalar totals; step generation is
-    * row-local chained generators. */
-  private[graft] def knTrigramScores(
-      docs: DataFrame, train: DataFrame): DataFrame = {
-    val ttk = train.select(wsTokens(col("text")).as("toks"))
-      .withColumn("n", size(col("toks")))
-    // train trigram tokens, kept as COLUMNS (u,v,w) — the derived
-    // continuation tables need the (u,v)/(v,w)/(v) projections
-    val tri3 = ttk.filter(col("n") >= 3)
-      .select(col("toks"), explode(sequence(lit(3), col("n"))).as("i"))
-      .select(element_at(col("toks"), col("i") - 2).as("u"),
-        element_at(col("toks"), col("i") - 1).as("v"),
-        element_at(col("toks"), col("i")).as("w"))
-    val t3 = tri3.groupBy(col("u"), col("v"), col("w"))
-      .agg(count(lit(1)).as("c3"))
-    // Σc(uv·) + N1+(uv·): the top-level denominator and discount mass.
-    // Using the trigram-context SUM (not the raw bigram count) keeps
-    // the level self-normalizing at document boundaries, where a
-    // bigram can occur without ever starting a trigram.
-    val ctx3 = t3.groupBy(col("u"), col("v"))
-      .agg(sum(col("c3")).as("ctx3"), count(lit(1)).as("n1p_uv"))
-    // N1+(·vw): distinct LEFT contexts of (v,w) — the KN continuation
-    // count ("how many different ways does vw continue a history")
-    val cc2 = t3.groupBy(col("v"), col("w")).agg(count(lit(1)).as("cc2"))
-    val mid = cc2.groupBy(col("v"))
-      .agg(sum(col("cc2")).as("ccm"), count(lit(1)).as("n1p_v"))
-    // N1+(·w) from BIGRAM types (the bottom continuation distribution
-    // covers words that appear in bigrams but never inside a trigram)
-    val big2 = ttk.filter(col("n") >= 2)
-      .select(col("toks"), explode(sequence(lit(2), col("n"))).as("i"))
-      .select(element_at(col("toks"), col("i") - 1).as("a"),
-        element_at(col("toks"), col("i")).as("w"))
-      .groupBy(col("a"), col("w")).agg(count(lit(1)).as("cb"))
-    val cc1 = big2.groupBy(col("w")).agg(count(lit(1)).as("cc1"))
-    val scal = cc1.agg(sum(col("cc1")).as("tt"), count(lit(1)).as("v1"))
-      .crossJoin(ttk.select(explode(col("toks")).as("tok")).distinct()
-        .agg(count(lit(1)).as("vocab")))
-    val steps = docs
-      .select(col("doc_id"), wsTokens(col("text")).as("toks"))
-      .withColumn("n", size(col("toks")))
-      .filter(col("n") >= 3)
-      .select(col("doc_id"), col("toks"),
-        explode(sequence(lit(3), col("n"))).as("i"))
-      .select(col("doc_id"),
-        element_at(col("toks"), col("i") - 2).as("u"),
-        element_at(col("toks"), col("i") - 1).as("v"),
-        element_at(col("toks"), col("i")).as("w"))
-    // every max(4c−3,0) is exact BIGINT; each level is one double
-    // division of a fused (a + b·p) numerator — mirrored shape in SQL
-    def m4(c: Column) = greatest(c * 4 - 3, lit(0L))
-    steps
-      .join(t3, Seq("u", "v", "w"), "left")
-      .join(ctx3, Seq("u", "v"), "left")
-      .join(cc2, Seq("v", "w"), "left")
-      .join(mid, Seq("v"), "left")
-      .join(cc1, Seq("w"), "left")
-      .crossJoin(broadcast(scal))
-      .withColumn("p1",
-        (m4(coalesce(col("cc1"), lit(0L))) * (col("vocab") + 1)
-          + col("v1") * 3).cast("double")
-          / (col("tt") * (col("vocab") + 1) * 4).cast("double"))
-      .withColumn("p2",
-        when(col("ccm").isNotNull,
-          (m4(coalesce(col("cc2"), lit(0L))).cast("double")
-            + (col("n1p_v") * 3).cast("double") * col("p1"))
-            / (col("ccm") * 4).cast("double"))
-          .otherwise(col("p1")))
-      .withColumn("p3",
-        when(col("ctx3").isNotNull,
-          (m4(coalesce(col("c3"), lit(0L))).cast("double")
-            + (col("n1p_uv") * 3).cast("double") * col("p2"))
-            / (col("ctx3") * 4).cast("double"))
-          .otherwise(col("p2")))
-      .withColumn("lp_q", round(-log(col("p3")) * 1e4, 0).cast("long"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_steps"), sum(col("lp_q")).as("s_lp"))
-      .select(col("doc_id"), col("n_steps"),
-        (intRoundHalfAway(col("s_lp"), col("n_steps")).cast("double") / 1e4)
-          .as("ppl3_kn"))
-  }
-
-  /** X83: interpolated Kneser-Ney trigram log-perplexity — closes the
-    * verdict's "smoothed LM" gap (r7 item 2): trains on the en slice
-    * (the x42/x64 convention) and scores every doc, so the CCNet
-    * shape (train on target domain, threshold the scored corpus) now
-    * runs with the filter's actual model class instead of stupid
-    * backoff. Same CCNet provenance note as x64; the reference has no
-    * LM (`Modelo de Previsão de Vendas.py` is sales forecasting) —
-    * this is the beyond-reference training-data surface. */
-  val x83KnLogppl: Q = (s, d) => {
-    val docs = Tables.documents(s, d)
-    knTrigramScores(docs, docs.filter(col("lang") === "en"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** X84: perceptual image hash (64-bit dHash) over the multimodal
-    * payload column — the first IMAGE-side dedup primitive (r7
-    * verdict item 3: text had six dedup operators, images zero).
-    * [[graft.multimodal.Multimodal.dHash64]] holds the semantics +
-    * stub contract (decode is faked from md5 rows, the Spark-side
-    * mapPartitions/codec-batch shape is real). Runs on the dup
-    * fixture's bounded slice so x85 has exact-copy collisions to
-    * find. Row-local scan; 8 bytes out per asset. */
-  val x84PerceptualHash: Q = (s, d) => {
-    val slice = corpusWithDupes(s, d).filter(col("doc_id") % 1000000 < 200)
-    graft.multimodal.Multimodal.dHash64(
-      s, graft.multimodal.Multimodal.withBinaryPayload(slice))
-      .toDF()
-      .orderBy(col("doc_id"))
-  }
-
-  /** X85: image near-dup pairs — [[x84PerceptualHash]] signatures
-    * through the SAME banded-Hamming machinery as x23 (4×16-bit
-    * bands, pigeonhole-lossless for Hamming ≤ 3, candidates only ever
-    * join within band buckets — no all-pairs; PlansSpec asserts it).
-    * On the stub codec only exact payload copies collide (md5 is
-    * avalanche — documented in dHash64); with a real decoder the
-    * identical plan catches resized/re-encoded images. Oracle = the
-    * n² Hamming scan the lossless banding must equal (x23
-    * precedent). */
-  val x85DhashNearDup: Q = (s, d) => {
-    val sigs = graft.multimodal.Multimodal.dHash64(
-      s, graft.multimodal.Multimodal.withBinaryPayload(
-        corpusWithDupes(s, d).filter(col("doc_id") % 1000000 < 200)))
-      .toDF().select(col("doc_id"), col("dhash").as("simhash"))
-    simhashBandedPairs(sigs, bandBits = 16, nBands = 4, maxHamming = 3)
-      .orderBy(col("id_a"), col("id_b"))
-  }
-
-  /** X65: PCA whitening onto the top-2 eigenbasis — the standard
-    * pre-ANN / SemDeDup conditioning transform (decorrelate, then
-    * scale each retained direction to unit variance): w_c =
-    * (x·u_c − μ·u_c)/√λ_c for the top-2 eigenpairs of the corpus
-    * covariance. Composes [[x46EmbedCovariance]]'s one-pass Gram
-    * moments with [[x49PcaProject]]'s driver eigensolve, extended by
-    * Hotelling deflation (M₂ = M − λ₁u₁u₁ᵀ) for the second
-    * component — the textbook repeated-power-iteration-with-deflation
-    * top-k factorization. Scale shape: THREE corpus scans for the
-    * moments (count, d-row sums, d(d+1)/2 Gram cells — all collapsing
-    * to driver-sized relations; the d×d eigensolve + deflation is
-    * 64×64 doubles, corpus-size-free), then ONE distributed row-local
-    * projection against broadcast-literal eigenvectors — no join, no
-    * shuffle but the output sort (plan-asserted). Determinism: the
-    * covariance cells reuse x46's exact integer arithmetic (the
-    * driver-side intRound replica of intRoundHalfAway), power
-    * iteration / Rayleigh quotient / deflation are +,×,÷,abs,max
-    * folds written in the same left-to-right order on both engines
-    * (the x49 precedent), and the projection mirrors list_sum's
-    * accumulation (the x5/x12 cosSql contract). Non-positive
-    * eigenvalues (a collapsed residual spectrum) yield NULL scores
-    * on both sides. */
-  val x65EmbedWhiten: Q = (s, d) => {
-    val emb = Tables.embeddings(s, d)
-    // moments + eigensolve machinery shared with [[graft.ml.Opq]]
-    // (x99b) — identical arithmetic, one implementation
-    val (m, sums, n) = graft.ml.Opq.covariance(emb)
-    val (u1, lam1) = graft.ml.Opq.topEig(m)
-    val (u2, lam2) = graft.ml.Opq.topEig(graft.ml.Opq.deflate(m, u1, lam1))
-    def mdot(u: Array[Double]): Double =
-      sums.zip(u).map { case (a, b) => a.toDouble * b }.sum / (n.toDouble * 1e6)
-    def score(u: Array[Double], md: Double, lam: Double): Column =
-      if (lam > 0)
-        round((aggregate(
-          zip_with(col("embedding"), array(u.map(lit).toSeq: _*),
-            (x, y) => x.cast("double") * y),
-          lit(0.0), (acc, x) => acc + x) - lit(md)) / lit(math.sqrt(lam)), 6)
-      else lit(null).cast("double")
-    emb.select(col("vec_id"),
-      score(u1, mdot(u1), lam1).as("w1"),
-      score(u2, mdot(u2), lam2).as("w2"))
-      .orderBy(col("vec_id"))
-  }
-
-  /** X66: boilerplate-segment detection — the line-level dedup of
-    * CCNet / RefinedWeb re-expressed for a corpus whose documents
-    * carry no newlines: split each doc into fixed 8-token segments,
-    * count each segment's document frequency corpus-wide, and score
-    * each doc by the fraction of its segments that are boilerplate
-    * (df ≥ 3). The fixture prepends a per-source banner ("portal
-    * <src> official mirror terms of service …") so the shared
-    * template every site stamps on its pages exists to be caught —
-    * the first 8-token segment of every doc of a source is
-    * byte-identical, the second mixes banner tail with document text
-    * and stays unique. Shape: one corpus scan → row-local segment
-    * explode (md5 fingerprints, never text, cross the wire) →
-    * fp-keyed df count (partial-aggregated shuffle) → fp-keyed join
-    * back → doc-keyed aggregation. The same two-shuffle budget as
-    * exact dedup (x1) at any corpus size; the df table is
-    * unique-segment-sized, exactly the CCNet paragraph-hash table. */
-  val x66BoilerplateSegments: Q = (s, d) => {
-    val seg = spread(s, Tables.documents(s, d))
-      .select(col("doc_id"),
-        wsTokens(concat(lit("portal "), col("source"),
-          lit(" official mirror terms of service apply"
-            + " all rights reserved contact webmaster "),
-          col("text"))).as("toks"))
-      .select(col("doc_id"), col("toks"),
-        explode(sequence(lit(0L),
-          call_function("div", size(col("toks")).cast("long") + 7L, lit(8L))
-            - 1)).as("g"))
-      .select(col("doc_id"),
-        md5(array_join(
-          slice(col("toks"), (col("g") * 8 + 1).cast("int"), lit(8)),
-          " ")).as("fp"))
-    val df = seg.groupBy(col("fp"))
-      .agg(countDistinct(col("doc_id")).as("df"))
-    seg.join(df, Seq("fp"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_seg"),
-        sum(when(col("df") >= 3, 1L).otherwise(0L)).as("n_boiler"))
-      .select(col("doc_id"), col("n_seg"), col("n_boiler"),
-        (intRoundHalfAway(col("n_boiler") * 10000L, col("n_seg"))
-          .cast("double") / 1e4).as("boiler_frac"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** X67: vocabulary-growth (Heaps-law) curve — new distinct token
-    * types per decile of the ingestion order vs token mass processed,
-    * the curve a data lead reads to decide whether more of the same
-    * source still buys vocabulary (steep tail) or only repeats it
-    * (flat tail). Attribution is classic first-occurrence: a type
-    * belongs to the decile of its min(doc_id). Shape: one corpus
-    * scan → token explode → token-keyed min/count aggregation
-    * (partial-aggregated, the x39 vocabulary shuffle) collapsing onto
-    * a 10-row bucket grid; the cumulative window runs on those 10
-    * rows with no partition — safe because the frame is
-    * decile-sized, never corpus-sized. All-integer throughout: no
-    * rounding hazard exists anywhere in the query. */
-  val x67VocabGrowth: Q = (s, d) => {
-    val docs = Tables.documents(s, d)
-    val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-    val width = maxId / 10 + 1
-    val tok = spread(s, docs)
-      .select(col("doc_id"), explode(wsTokens(col("text"))).as("w"))
-    val arrivals = tok
-      .groupBy(call_function("div", col("doc_id"), lit(width)).as("bucket"))
-      .agg(count(lit(1)).as("n_tok"))
-    val fresh = tok.groupBy(col("w")).agg(min(col("doc_id")).as("first_doc"))
-      .groupBy(call_function("div", col("first_doc"), lit(width)).as("bucket"))
-      .agg(count(lit(1)).as("n_new_types"))
-    val w = Window.orderBy(col("bucket"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    arrivals.join(fresh, Seq("bucket"), "left")
-      .na.fill(0L, Seq("n_new_types"))
-      .select(col("bucket"), col("n_tok"), col("n_new_types"),
-        sum(col("n_tok")).over(w).as("cum_tok"),
-        sum(col("n_new_types")).over(w).as("cum_types"))
-      .orderBy(col("bucket"))
-  }
-
-  /** X153: Heaps'-law fit (Heaps 1978; Herdan) — the SCALING SUMMARY
-    * of x67's vocabulary-growth curve: fit V = K·Nᵝ by exact-integer
-    * OLS over the quantized log-log curve points
-    * ([[graft.ml.LogFit]]), and extrapolate the vocabulary a 10×
-    * corpus would carry — the number a data lead actually asks the
-    * growth curve for ("do we keep finding new types at the next
-    * order of magnitude?"). β ≈ 0.4–0.6 for natural text; β → 0
-    * flags a corpus that only repeats itself. Everything after x67's
-    * one corpus scan is a 10-row driver-side regression; the single
-    * transcendental seam (ln, exp) follows the x39
-    * quantize-after-evaluation recipe. */
-  val x153HeapsFit: Q = (s, d) => {
-    import graft.ml.LogFit
-    val curve = x67VocabGrowth(s, d)
-      .select(col("cum_tok"), col("cum_types")).collect()
-    val pts = curve.map(r => (LogFit.lq(r.getLong(0).toDouble),
-      LogFit.lq(r.getLong(1).toDouble))).toSeq
-    val f = LogFit.fit(pts)
-    val nTot = curve.map(_.getLong(0)).max
-    val tq = LogFit.predictQ(f, LogFit.lq(10.0 * nTot))
-    val pred = BigDecimal(math.exp(tq.toDouble / 1e6))
-      .setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble
-    s.createDataFrame(Seq((f.n, f.slopeQ.toDouble / 1e6,
-        f.interceptQ.toDouble / 1e6, pred)))
-      .toDF("n_points", "beta", "ln_k", "v_pred_10x")
-  }
-
-  /** X154: Zipf rank-frequency fit (Zipf 1949) — the corpus-health
-    * twin of x153 on the OTHER power law: over the top-30 token
-    * ranks, fit ln f = a + s·ln r with the same exact-integer OLS
-    * ([[graft.ml.LogFit]]) plus R² on the shared quantized
-    * predictions. Natural text sits near s ≈ −1 with high R²;
-    * template/boilerplate-dominated corpora flatten the head (s → 0)
-    * and synthetic repetition breaks the linearity (low R²) — the
-    * one-row signal a feed monitor thresholds. Top-30 via
-    * TakeOrdered (never a vocabulary-wide window); the regression is
-    * 30 driver-side rows. */
-  val x154ZipfFit: Q = (s, d) => {
-    import graft.ml.LogFit
-    val top = Tables.documents(s, d)
-      .select(explode(wsTokens(col("text"))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc, col("w")).limit(30)
-      .collect()
-    val pts = top.zipWithIndex.map { case (r, i) =>
-      (LogFit.lq((i + 1).toDouble), LogFit.lq(r.getLong(1).toDouble))
-    }.toSeq
-    val f = LogFit.fit(pts)
-    val r2 = LogFit.r2Q(pts, f)
-    s.createDataFrame(Seq((f.n, f.slopeQ.toDouble / 1e6,
-        f.interceptQ.toDouble / 1e6,
-        r2.map(_.toDouble / 1e6).getOrElse(Double.NaN))))
-      .toDF("n_points", "slope", "intercept", "r2")
-      .select(col("n_points"), col("slope"), col("intercept"),
-        when(!isnan(col("r2")), col("r2")).as("r2"))
-  }
-
-  /** X155: Simple Good-Turing smoothing (Gale & Sampson 1995, "Good-
-    * Turing frequency estimation without tears") — the SMOOTHER x151
-    * documents the need for: raw Turing r* degenerates on gappy FoF
-    * tails, so SGT (a) spreads each N_r over its empty neighborhood
-    * (Z_r = 2·N_r/(t−q) with q/t the adjacent nonzero ranks), (b)
-    * fits ln Z = a + b·ln r with [[graft.ml.LogFit]]'s exact-integer
-    * OLS, giving the log-linear estimate r_LGT = r·(1+1/r)^(b+1), and
-    * (c) switches from Turing to LGT at the FIRST rank where Turing
-    * is undefined or the two agree within 1.65·σ(r_T) (the published
-    * rule, "once switched, stay switched"). Probabilities renormalize
-    * the seen mass to 1−P₀ as ONE exact integer rational per class:
-    * p(r) = (N−N₁)·e₄(r) / (N·Σ N_r·e₄(r)) — pinned to telescope in
-    * EngineSpec (the identity x151's raw estimator provably fails).
-    * Determinism: the only double seams are ln/exp/sqrt, each
-    * quantized immediately after evaluation with both engines sharing
-    * the op order (x39 rule); the fit, switch scan, and
-    * renormalization are pure integer arithmetic on the
-    * dimension-bounded FoF relation (≲2√N rows), driver-side — the
-    * corpus is touched exactly once. */
-  val x155SgtSmoothing: Q = (s, d) => {
-    import graft.ml.LogFit
-    val fof = Tables.documents(s, d)
-      .select(explode(wsTokens(col("text"))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("c"))
-      .groupBy(col("c").as("r")).agg(count(lit(1)).as("n_r"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val byR = fof.toMap
-    val n = fof.map { case (r, nr) => r * nr }.sum
-    val n1 = byR.getOrElse(1L, 0L)
-    val rs = fof.map(_._1)
-    val zPts = fof.zipWithIndex.map { case ((r, nr), i) =>
-      val q = if (i == 0) 0L else rs(i - 1)
-      val t = if (i == rs.length - 1) 2 * r - q else rs(i + 1)
-      (LogFit.lq(r.toDouble),
-        LogFit.lqSigned(2.0 * nr.toDouble / (t - q).toDouble))
-    }
-    val f = LogFit.fit(zPts.toSeq)
-    val b = f.slopeQ.toDouble / 1e6
-    def lgt4(r: Long): Long = LogFit.qScaled(
-      r.toDouble * math.exp((b + 1.0) * math.log(1.0 + 1.0 / r.toDouble)),
-      1e4)
-    def turing4(r: Long): Option[Long] = byR.get(r + 1).map { nn =>
-      ((BigInt(2) * (r + 1) * nn * 10000 + byR(r)) /
-        (BigInt(2) * byR(r))).toLong
-    }
-    def thr4(r: Long): Long = byR.get(r + 1).map { nn =>
-      val nr = byR(r).toDouble
-      LogFit.qScaled(1.65 * math.sqrt(
-        ((r + 1) * (r + 1)).toDouble * (nn.toDouble / (nr * nr))
-          * (1.0 + nn.toDouble / nr)), 1e4)
-    }.getOrElse(0L)
-    val switchR = rs.find { r =>
-      turing4(r) match {
-        case None => true
-        case Some(t4) => (t4 - lgt4(r)).abs <= thr4(r)
-      }
-    }.getOrElse(Long.MaxValue)
-    val est = fof.map { case (r, nr) =>
-      val e4 = if (r < switchR) turing4(r).get else lgt4(r)
-      (r, nr, turing4(r), lgt4(r), e4)
-    }
-    val bigS = est.map { case (_, nr, _, _, e4) => BigInt(nr) * e4 }.sum
-    val rows = est.map { case (r, nr, t4, l4, e4) =>
-      val pq = (BigInt(2) * (BigInt(n - n1) * e4 * 100000000L)
-        + BigInt(n) * bigS) / (BigInt(2) * BigInt(n) * bigS)
-      (r, nr, t4.map(_.toDouble / 1e4), l4.toDouble / 1e4,
-        e4.toDouble / 1e4, pq.toDouble / 1e8, r >= switchR)
-    }
-    s.createDataFrame(rows.toSeq)
-      .toDF("r", "n_r", "r_turing", "r_lgt", "r_sgt", "p_sgt", "lgt_used")
-      .select(col("r"), col("n_r"), col("r_turing"), col("r_lgt"),
-        col("r_sgt"), col("p_sgt"), col("lgt_used"))
-      .orderBy(col("r"))
-  }
-
-  /** X156: repeat-value curve under data-constrained scaling
-    * (Muennighoff et al. 2023, "Scaling data-constrained language
-    * models"): their fitted decay law prices REPEATED epochs of a
-    * source against fresh tokens — effective data
-    * D_eff = U·(1 + R*·(1−e^{−R/R*})) with the published R* = 15.39,
-    * so ~4 epochs are nearly as good as fresh data and value decays
-    * to the U·(1+R*) asymptote by ~16-32 (the paper's headline). Per
-    * source and epoch grid R ∈ {0,1,2,4,8,16,32}: unique-token mass,
-    * effective tokens, and efficiency = D_eff / (U·(1+R)) — the
-    * discount a mixture planner (x141's UniMax, x50) should apply to
-    * a repeated source before allocating budget. Scale shape: U is
-    * one map-side-combinable scan onto |sources| rows; the grid is a
-    * broadcast 7-row literal; the single transcendental (a per-R
-    * CONSTANT e^{−R/R*}) follows the quantize-after-evaluation rule,
-    * and efficiency is an exact integer rational of the quantized
-    * D_eff. */
-  val x156RepeatValue: Q = (s, d) => {
-    val u = Tables.documents(s, d)
-      .select(col("source"), tokenCount(col("text")).cast("long").as("nt"))
-      .groupBy(col("source")).agg(sum(col("nt")).as("u_tok"))
-    val grid = s.createDataFrame(Seq(0L, 1L, 2L, 4L, 8L, 16L, 32L)
-      .map(Tuple1(_))).toDF("epochs")
-    u.crossJoin(broadcast(grid))
-      .withColumn("d_eff", round(col("u_tok").cast("double")
-        * (lit(1.0) + lit(15.39) * (lit(1.0)
-          - exp(-col("epochs").cast("double") / lit(15.39)))), 0)
-        .cast("long"))
-      .select(col("source"), col("epochs"), col("u_tok"), col("d_eff"),
-        (intRoundHalfAway(col("d_eff") * 10000L,
-          col("u_tok") * (lit(1L) + col("epochs"))).cast("double") / 1e4)
-          .as("efficiency"))
-      .orderBy(col("source"), col("epochs"))
-  }
-
-  /** X170: data-constrained novelty-decay fit (the measurement behind
-    * Muennighoff et al. 2023's L(N,D) law, fitted FROM this corpus
-    * instead of assuming the paper's R* = 15.39 the way [[x156
-    * RepeatValue]] does): per source, the marginal trigram novelty
-    * m_i across the 10 ingestion deciles (x153's decile machinery on
-    * the n-gram space — the whitespace vocabulary saturates in one
-    * decile on this corpus, a correct signal x153 already records)
-    * follows the exponential decay ln m_i = ln A − i/R*; the fit is
-    * [[graft.ml.LogFit]]'s exact-integer OLS with x = decile·10⁶ and
-    * y = the quantized log novelty, over POSITIVE deciles only (log
-    * domain — exhausted deciles drop, and a source with < 2 distinct
-    * positive deciles reports NULL fit columns rather than a fake
-    * decay). Emitted per source: the decay slope, R* = −1/slope (the
-    * deciles of fresh ingestion until marginal novelty falls by e —
-    * the source's effective-data scale; NULL when the slope is not
-    * negative), the half-life R*·ln 2, and R² on the shared quantized
-    * predictions. This is the number that prices x168's stage budgets
-    * and x141's repeat caps per source from the source's OWN data.
-    * Scale shape: one shingle scan → (source, gram)-keyed first-
-    * occurrence min — map-side combinable, the x52 shuffle — onto a
-    * |sources|×10 relation; the regressions are driver-side on that
-    * bounded table (the LogFit contract). Oracle: the per-source OLS
-    * replayed GROUP BY source on HUGEINT. */
-  val x170ScalingFit: Q = (s, d) =>
-    scalingFitOn(s, Tables.documents(s, d))
-
-  /** [[x170ScalingFit]] core over any (doc_id, source, text) frame
-    * (exposed for the EngineSpec exactly-collinear pin). */
-  private[graft] def scalingFitOn(s: SparkSession,
-      docs: DataFrame): DataFrame = {
-    import graft.ml.LogFit
-    val width = docs.agg(max(col("doc_id"))).head().getLong(0) / 10L + 1L
-    val fresh = docs
-      .select(col("source"), col("doc_id"), wsTokens(col("text")).as("toks"))
-      .select(col("source"), col("doc_id"),
-        explode(allShinglesOfToks(col("toks"), 3)).as("g"))
-      .groupBy(col("source"), col("g"))
-      .agg(min(col("doc_id")).as("fd"))
-      .groupBy(col("source"),
-        call_function("div", col("fd"), lit(width)).as("bucket"))
-      .agg(count(lit(1)).as("m"))
-      .collect()
-    val rows = fresh.map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      .groupBy(_._1).toSeq.sortBy(_._1).map { case (src, bs) =>
-        val pts = bs.sortBy(_._2)
-          .map { case (_, b, m) => (b * 1000000L, LogFit.lq(m.toDouble)) }
-          .toSeq
-        val nPos = pts.size.toLong
-        if (pts.map(_._1).distinct.size < 2)
-          (src, nPos, Double.NaN, Double.NaN, Double.NaN, Double.NaN)
-        else {
-          val f = LogFit.fit(pts)
-          val r2 = LogFit.r2Q(pts, f)
-            .map(_.toDouble / 1e6).getOrElse(Double.NaN)
-          val slope = f.slopeQ.toDouble / 1e6
-          if (f.slopeQ < 0L) {
-            val rstar = LogFit.halfAway(BigInt(1000000L) * 10000L,
-              BigInt(-f.slopeQ)).toDouble / 1e4
-            val hl = LogFit.qScaled(
-              math.log(2.0) * 1e6 / (-f.slopeQ).toDouble, 1e4)
-              .toDouble / 1e4
-            (src, nPos, slope, rstar, hl, r2)
-          } else (src, nPos, slope, Double.NaN, Double.NaN, r2)
-        }
-      }
-    s.createDataFrame(rows)
-      .toDF("source", "n_points", "slope_raw", "rstar_raw", "hl_raw",
-        "r2_raw")
-      .select(col("source"), col("n_points"),
-        when(!isnan(col("slope_raw")), col("slope_raw")).as("slope"),
-        when(!isnan(col("rstar_raw")), col("rstar_raw")).as("r_star"),
-        when(!isnan(col("hl_raw")), col("hl_raw")).as("half_life"),
-        when(!isnan(col("r2_raw")), col("r2_raw")).as("r2"))
-      .orderBy(col("source"))
-  }
-
-  /** X171: Min-K% membership inference (Shi et al. 2023, "Detecting
-    * pretraining data from large language models") — the
-    * decontamination family's MISSING direction: x20/x41/x97/x119
-    * match eval text against the corpus; this detects it from the
-    * MODEL side, no corpus access — memorized text is likely even at
-    * its least-likely tokens, so the mean NLL of each doc's worst 20%
-    * of positions (Min-K%, k = 20) separates members from
-    * non-members. Instantiation: the scoring model is the add-one
-    * bigram trained on the md5 train split (x149's reference); the
-    * pool is the held-out split (true non-members) plus a planted
-    * re-presentation of train docs (doc_id % 7 = 0, re-keyed +3M —
-    * the x119/x128 deterministic-plant convention; they WERE
-    * trained on). Per class: doc count and the mean/min/max Min-K%
-    * NLL — planted mean provably below clean mean (pinned in
-    * EngineSpec). Determinism: per-position NLL is the x149 1e-4
-    * integer; the bottom-k cut is ROW_NUMBER over (NLL DESC,
-    * position) with k = ⌈n/5⌉ as the integer predicate 5·rk ≤ n+4;
-    * means are [[intRoundHalfAway]]. Scale shape: one train gram
-    * build, one pool scoring scan, a PER-DOC window (each partition
-    * is one doc's positions — never corpus-wide), doc-sized then
-    * class-sized rollups. */
-  val x171MinkMembership: Q = (s, d) =>
-    minkMembershipOn(Tables.documents(s, d))
-
-  /** [[x171MinkMembership]] core over any (doc_id, text) frame
-    * (exposed for the EngineSpec crafted-memorization pin). */
-  private[graft] def minkMembershipOn(docs: DataFrame): DataFrame = {
-    val balde = pmod(
-      conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long"), lit(100L))
-    val train = docs.filter(balde < 90)
-    val pool = docs.filter(balde >= 90)
-      .select(col("doc_id"), col("text"), lit("clean").as("cls"))
-      .unionByName(train.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 3000000L).as("doc_id"), col("text"),
-          lit("planted").as("cls")))
-    val tr = train.select(wsTokens(col("text")).as("toks"))
-    val uni = tr.select(explode(col("toks")).as("w1"))
-      .groupBy(col("w1")).agg(count(lit(1)).as("c1"))
-    val scal = uni.agg(sum(col("c1")).as("nn"),
-      (count(lit(1)) + 1L).as("v"))
-    val cnt2 = tr.select(explode(allShinglesOfToks(col("toks"), 2)).as("g"))
-      .groupBy(col("g")).agg(count(lit(1)).as("c2"))
-    val poolBi = pool
-      .select(col("cls"), col("doc_id"), wsTokens(col("text")).as("toks"))
-      .withColumn("n", size(col("toks"))).filter(col("n") >= 2)
-      .select(col("cls"), col("doc_id"),
-        explode(sequence(lit(2), col("n"))).as("i"),
-        col("toks"))
-      .select(col("cls"), col("doc_id"), col("i"),
-        concat_ws(" ", element_at(col("toks"), col("i") - 1),
-          element_at(col("toks"), col("i"))).as("g"),
-        element_at(col("toks"), col("i") - 1).as("w1"))
-    val scored = poolBi
-      .join(cnt2, Seq("g"), "left").join(uni, Seq("w1"), "left")
-      .crossJoin(broadcast(scal))
-      .withColumn("lp", round(-log(
-          (coalesce(col("c2"), lit(0L)).cast("double") + 1.0) /
-          (coalesce(col("c1"), lit(0L)).cast("double")
-            + col("v").cast("double"))) * 1e4, 0).cast("long"))
-    val wD = Window.partitionBy(col("doc_id"))
-    val perDoc = scored
-      .withColumn("rk", row_number().over(
-        wD.orderBy(col("lp").desc, col("i"))).cast("long"))
-      .withColumn("nb", count(lit(1)).over(wD))
-      .filter(col("rk") * 5L <= col("nb") + 4L)
-      .groupBy(col("cls"), col("doc_id"))
-      .agg(count(lit(1)).as("k"), sum(col("lp")).as("sl"))
-      .select(col("cls"), col("doc_id"),
-        intRoundHalfAway(col("sl"), col("k")).as("mink_q"))
-    perDoc.groupBy(col("cls"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("mink_q")).as("sm"),
-        min(col("mink_q")).as("mn"), max(col("mink_q")).as("mx"))
-      .select(col("cls"), col("n_docs"),
-        (intRoundHalfAway(col("sm"), col("n_docs")).cast("double") / 1e4)
-          .as("mean_mink_nll"),
-        (col("mn").cast("double") / 1e4).as("min_mink_nll"),
-        (col("mx").cast("double") / 1e4).as("max_mink_nll"))
-      .orderBy(col("cls"))
-  }
-
-  /** X172: leave-one-source-out data value — the datamodels/Shapley
-    * question ("what is each SOURCE worth to the model?") answered
-    * EXACTLY for the add-one unigram LM, no retraining: gram counts
-    * are additive sufficient statistics, so the model trained on
-    * train−s is just (c(w) − c_s(w) + 1)/(N − N_s + V − u_s) — global
-    * counts minus the source's own count table, vocabulary shrunk by
-    * the source's unique types. Per source: held-out NLL under the
-    * full model, under the LOO model, and Δ = NLL_loo − NLL_full —
-    * positive Δ means removing the source HURTS held-out loss (the
-    * source carries vocabulary/mass the rest can't cover), negative Δ
-    * means the source is dead weight whose mass only dilutes the
-    * model (pinned both ways on a crafted corpus in EngineSpec).
-    * This is the mixture family's causal complement: x166 DoReMi
-    * weights by excess loss, this prices each source's marginal
-    * contribution. Determinism: per-TYPE NLLs quantized 1e-4 (x39
-    * rule), weighted by exact held-out type counts, means
-    * [[intRoundHalfAway]] over the held-out token total. Scale
-    * shape: gram tables are map-side-combinable scans; the LOO
-    * evaluation is the held-out TYPE table × the |sources|-row stat
-    * table (vocabulary-sized × S — the classic working set, never
-    * corpus × S), one broadcast join against the (w, source) count
-    * table. */
-  val x172LooSourceValue: Q = (s, d) =>
-    looSourceValueOn(Tables.documents(s, d))
-
-  /** [[x172LooSourceValue]] core over any (doc_id, source, text)
-    * frame (exposed for the EngineSpec crafted pins). */
-  private[graft] def looSourceValueOn(docs: DataFrame): DataFrame = {
-    val balde = pmod(
-      conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long"), lit(100L))
-    val csw = docs.filter(balde < 90)
-      .select(col("source"), explode(wsTokens(col("text"))).as("w"))
-      .groupBy(col("w"), col("source")).agg(count(lit(1)).as("cs"))
-      .localCheckpoint()
-    val cw = csw.groupBy(col("w"))
-      .agg(sum(col("cs")).as("c"), count(lit(1)).as("nsrc"))
-    val srcs = csw.groupBy(col("source")).agg(sum(col("cs")).as("ns"))
-      .join(csw.join(cw.select(col("w"), col("nsrc")), Seq("w"))
-        .filter(col("nsrc") === 1L)
-        .groupBy(col("source")).agg(count(lit(1)).as("us")),
-        Seq("source"), "left")
-      .select(col("source"), col("ns"),
-        coalesce(col("us"), lit(0L)).as("us"))
-    val glob = cw.agg(sum(col("c")).as("n"), (count(lit(1)) + 1L).as("v"))
-    val hoT = docs.filter(balde >= 90)
-      .select(explode(wsTokens(col("text"))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("cnt_ho"))
-      .join(cw.select(col("w"), col("c")), Seq("w"), "left")
-      .select(col("w"), col("cnt_ho"), coalesce(col("c"), lit(0L)).as("c"))
-      .localCheckpoint()
-    val hn = hoT.agg(sum(col("cnt_ho")).as("hn"))
-    val full = hoT.crossJoin(broadcast(glob))
-      .select((col("cnt_ho") * round(-log(
-          (col("c") + 1L).cast("double")
-          / (col("n") + col("v")).cast("double")) * 1e4, 0).cast("long"))
-        .as("t"))
-      .agg(sum(col("t")).as("sfull"))
-    val loo = hoT.crossJoin(broadcast(srcs))
-      .join(csw, Seq("w", "source"), "left")
-      .crossJoin(broadcast(glob))
-      .select(col("source"),
-        (col("cnt_ho") * round(-log(
-          (col("c") - coalesce(col("cs"), lit(0L)) + 1L).cast("double")
-          / (col("n") - col("ns") + col("v") - col("us")).cast("double"))
-          * 1e4, 0).cast("long")).as("t"))
-      .groupBy(col("source")).agg(sum(col("t")).as("sloo"))
-    loo.join(srcs, Seq("source"))
-      .crossJoin(broadcast(full)).crossJoin(broadcast(hn))
-      .select(col("source"), col("ns").as("n_tok_train"),
-        col("us").as("u_types"),
-        (intRoundHalfAway(col("sfull"), col("hn")).cast("double") / 1e4)
-          .as("nll_full"),
-        (intRoundHalfAway(col("sloo"), col("hn")).cast("double") / 1e4)
-          .as("nll_loo"),
-        ((intRoundHalfAway(col("sloo"), col("hn"))
-          - intRoundHalfAway(col("sfull"), col("hn"))).cast("double")
-          / 1e4).as("delta"))
-      .orderBy(col("source"))
-  }
-
-  /** X173: gradient-noise scale (McCandlish et al. 2018, "An
-    * empirical model of large-batch training") — the number that
-    * prices a TRAINING BATCH SIZE from the data itself: B_simple =
-    * tr(Σ)/‖g‖², the ratio of per-example gradient variance to the
-    * squared mean gradient; batches below it are noise-dominated
-    * (cheap to grow), above it waste compute. Computed exactly for
-    * the registry logistic model: per-example gradient g_i =
-    * (p_i − y_i)·x_i over the 68 sparse feature dims, so ONE scoring
-    * scan yields per-dim Σg and Σg² (absent sparse entries contribute
-    * exactly 0), and n CANCELS in the ratio — B = Σ_d(n·S2_d − S1_d²)
-    * / Σ_d S1_d², an exact integer rational on decimal(38,0) sums
-    * (Cauchy-Schwarz keeps the numerator ≥ 0; identical examples ⇒ 0,
-    * pinned in EngineSpec via [[gradientNoiseOn]]). The quantization
-    * seam is one double product per (doc, dim) — (p−y)·x·10⁶, rounded
-    * after evaluation (x39 rule); p is the trainer's own quantized σ.
-    * Scale shape: scoring scan → (doc, dim) row-local products →
-    * dim-keyed map-side-combinable sums → a 68-row rollup; the final
-    * three divisions run driver-side on two BigInt scalars. */
-  val x173GradientNoise: Q = (s, d) => {
-    val wdf = s.read.parquet(ensureClfWeights(s, d))
-    gradientNoiseOn(s, clfTf1(s, d), wdf)
-  }
-
-  /** [[x173GradientNoise]] core over any sparse feature table +
-    * weight table (exposed for the EngineSpec zero-variance pin). */
-  private[graft] def gradientNoiseOn(s: SparkSession, tf: DataFrame,
-      wdf: DataFrame): DataFrame = {
-    // dense rows: pq and the per-dim gradient terms are row-local (the
-    // former scored-join re-shuffle by doc_id is gone, guide §2.4);
-    // the post-explode filter reconstructs exactly the sparse row set
-    // (BOW buckets the doc fires — x > 0 — plus the always-present
-    // side features 64-67), so n_dims keeps its meaning: buckets with
-    // at least one firing doc.
-    val g = tf.crossJoin(broadcast(clfWRow(wdf)))
-      .withColumn("pq", pqOf(zqOf(col("xs"), col("ws"))))
-      .select(col("pq"), col("y"), posexplode(col("xs")).as(Seq("bucket", "x")))
-      .filter(col("x") > 0.0 || col("bucket") >= 64)
-      .select(col("bucket"),
-        round((col("pq") - col("y") * 1000000L).cast("double") * col("x"),
-          0).cast("long").as("gq"))
-    // n (the feature-table row count) is derived IN-PLAN from the
-    // bias bucket's row count — bucket 67 is lit(1.0) for every doc,
-    // so its gq count is exactly |tf| (optimization r12, guide §2.4:
-    // this retires the former eager localCheckpoint + count() pair;
-    // the whole query is one scan again). The former in-plan
-    // Σ(n·s2 − s1²) moves to exact driver-side BigInt via
-    // distributivity: t = n·Σs2 − Σs1² — identical integers.
-    val per = g.groupBy(col("bucket"))
-      .agg(sum(col("gq").cast("decimal(38,0)")).as("s1"),
-        sum(col("gq").cast("decimal(38,0)") * col("gq")).as("s2"),
-        count(lit(1)).as("cnt"))
-    val row = per.agg(
-        sum(col("s2")).as("ss2"),
-        sum(col("s1") * col("s1")).as("sn"),
-        count(lit(1)).as("ndims"),
-        max(when(col("bucket") === 67L, col("cnt"))).as("n"))
-      .head()
-    val n = row.getLong(3)
-    val ss2 = BigInt(row.getDecimal(0).toBigIntegerExact)
-    val sn = BigInt(row.getDecimal(1).toBigIntegerExact)
-    val t = BigInt(n) * ss2 - sn
-    val nd = row.getLong(2)
-    import graft.ml.LogFit.halfAway
-    val den = BigInt(n) * BigInt(n) * BigInt("1000000000000")
-    val traceQ = halfAway(t * 1000000L, den).toDouble / 1e6
-    val normQ = halfAway(sn * 1000000L, den).toDouble / 1e6
-    val gns =
-      if (sn > 0) halfAway(t * 10000L, sn).toDouble / 1e4 else Double.NaN
-    s.createDataFrame(Seq((n, nd, traceQ, normQ, gns)))
-      .toDF("n_docs", "n_dims", "grad_trace", "grad_norm2", "gns_raw")
-      .select(col("n_docs"), col("n_dims"), col("grad_trace"),
-        col("grad_norm2"),
-        when(!isnan(col("gns_raw")), col("gns_raw")).as("gns"))
-  }
-
-  /** X174: token burstiness — the Fano factor (variance-to-mean
-    * ratio) of each token's per-document count over the WHOLE corpus
-    * (zeros included), the corpus-linguistics dispersion statistic
-    * behind Church & Gale's Poisson-mixture work: a Poisson
-    * (content-neutral) token sits at F ≈ 1, a once-per-doc template
-    * token UNDER-disperses (F = 1 − cf/n < 1), and a bursty token
-    * (its mass packed into few docs — the boilerplate/navigation
-    * signature x66 hunts structurally) over-disperses F ≫ 1. All
-    * moments are exact integers off the (doc, token) count table —
-    * F = (n·Σc² − cf²)/(n·cf), one [[intRoundHalfAway]] — making the
-    * ranking engine-exact. Top-30 by (F DESC, token) via TakeOrdered
-    * (never a vocabulary-wide window). Shape: one scan → (doc, token)
-    * counts → token-keyed moment rollup (both map-side combinable) →
-    * top-k. Crafted same-mass burst-vs-spread separation pinned in
-    * EngineSpec. */
-  val x174TokenBurstiness: Q = (s, d) =>
-    tokenBurstinessOn(Tables.documents(s, d))
-
-  /** [[x174TokenBurstiness]] core (exposed for the EngineSpec pin). */
-  private[graft] def tokenBurstinessOn(docs: DataFrame): DataFrame = {
-    val dc = docs
-      .select(col("doc_id"), explode(wsTokens(col("text"))).as("w"))
-      .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("c"))
-    val nTot = docs.agg(count(lit(1)).as("n"))
-    dc.groupBy(col("w"))
-      .agg(count(lit(1)).as("df"), sum(col("c")).as("cf"),
-        sum(col("c") * col("c")).as("s2"))
-      .crossJoin(broadcast(nTot))
-      .withColumn("fano_q", intRoundHalfAway(
-        (col("n") * col("s2") - col("cf") * col("cf")) * 10000L,
-        col("n") * col("cf")))
-      .orderBy(col("fano_q").desc, col("w")).limit(30)
-      .select(col("w"), col("df"), col("cf"),
-        (intRoundHalfAway(col("cf") * 10000L, col("n"))
-          .cast("double") / 1e4).as("mean_per_doc"),
-        (col("fano_q").cast("double") / 1e4).as("fano"))
-      .orderBy(col("fano").desc, col("w"))
-  }
-
-  /** X179: greedy max-coverage source selection — the SUBMODULAR
-    * member of the mixture family (facility-location/coverage data
-    * selection, Nemhauser et al.'s 1−1/e greedy): given a budget of
-    * K = 5 sources, pick the set whose UNION of distinct trigrams is
-    * largest — x27/x141/x166 weight sources independently, but
-    * coverage is a set function and the second copy of a syndicated
-    * feed adds nothing; greedy marginal-gain selection is the
-    * published answer. Five unrolled steps, each ONE aggregation over
-    * the (trigram, source) incidence table joined anti the covered
-    * set (argmax by gain DESC, source ASC — engine-exact, no floats
-    * anywhere); the oracle replays all steps as MATERIALIZED CTEs
-    * (the x146 greedy discipline). Output per pick: rank, source,
-    * marginal gain, cumulative coverage and its share of the corpus
-    * trigram space. Subset sources add zero after their superset —
-    * greedy skips an individually-2nd-ranked subset source (pinned in
-    * EngineSpec on a crafted containment corpus). Scale shape: one
-    * shingle scan onto the distinct (gram, source) incidence — the
-    * x47 shuffle — then 5 bounded join+aggregate rounds; the only
-    * driver state is the ≤ 5 picked names. */
-  val x179CoverageSelect: Q = (s, d) =>
-    coverageSelectOn(s, Tables.documents(s, d), 5)
-
-  /** [[x179CoverageSelect]] core (exposed for the EngineSpec pin). */
-  private[graft] def coverageSelectOn(s: SparkSession, docs: DataFrame,
-      k: Int): DataFrame = {
-    // The greedy only ever needs, per round, the per-source count of
-    // UNCOVERED gram types — and a gram's coverage state depends only
-    // on WHICH sources contain it. So the (source, gram) incidence
-    // collapses ONCE into a source-combination histogram (r12, guide
-    // §2.3: shuffle keys and counts, not the gram strings): one
-    // canonical sorted source-set per gram, counted. Every greedy
-    // round then runs over the combo table — ≤ #gram-types rows,
-    // typically collapsing to a handful of combos — with ONE small
-    // aggregation, instead of re-scanning the full pair incidence
-    // through a distinct + left_anti + aggregation (3 exchanges)
-    // per round. gain(s) = Σ n over combos containing s that avoid
-    // every picked source: exactly the former uncovered-gram count,
-    // so picks, gains, cum and coverage are identical integers. The
-    // combos table stays cluster-side (checkpoint, never collected);
-    // the driver sees ≤ |sources| gain rows per round, as before.
-    val combos = docs
-      .select(col("source"), wsTokens(col("text")).as("toks"))
-      .select(col("source"),
-        explode(allShinglesOfToks(col("toks"), 3)).as("g"))
-      .groupBy(col("g"))
-      .agg(sort_array(collect_set(col("source"))).as("ss"))
-      .groupBy(col("ss")).agg(count(lit(1)).as("n"))
-      .localCheckpoint()
-    val totTypes = combos.agg(sum(col("n"))).head().getLong(0)
-    var cum = 0L
-    val picks = scala.collection.mutable.ArrayBuffer[(Long, String, Long, Long, Double)]()
-    val picked = scala.collection.mutable.Set[String]()
-    for (i <- 1 to k) {
-      // the greedy collect per round is the algorithm's honest data
-      // dependence (r11); uncovered = combos disjoint from the picked
-      // set, a row-local array check against one k-sized literal
-      val uncov = if (picked.isEmpty) combos
-        else combos.filter(!arrays_overlap(col("ss"),
-          array(picked.toSeq.sorted.map(lit): _*)))
-      val top = uncov
-        .select(explode(col("ss")).as("source"), col("n"))
-        .groupBy(col("source")).agg(sum(col("n")).as("gain"))
-        .orderBy(col("gain").desc, col("source")).limit(1).collect()
-      if (top.nonEmpty && top(0).getLong(1) > 0L) {
-        val src = top(0).getString(0); val gain = top(0).getLong(1)
-        cum += gain
-        picks += ((i.toLong, src, gain, cum,
-          graft.ml.LogFit.halfAway(BigInt(cum) * 10000L, BigInt(totTypes))
-            .toDouble / 1e4))
-        picked += src
-      }
-    }
-    s.createDataFrame(picks.toSeq)
-      .toDF("rk", "source", "gain", "cum_types", "coverage")
-      .orderBy(col("rk"))
-  }
-
-  /** X178: PageRank canonical selection over the near-dup graph —
-    * the third survivor POLICY beside x24's min-id and x152's
-    * quality argmax: production dedup stacks pick the most CENTRAL
-    * member of a duplicate family (the page every mirror points at
-    * structurally — the copy of record), and PageRank over the
-    * similarity graph is the published way to rank that (Page et al.
-    * 1999; same x14 pair graph, x73's degree table upgraded to a
-    * stationary score). Ten unrolled power iterations with d = 0.85,
-    * ranks in integer 1e-9 units: the neighbor share is the exact
-    * integer floor r div deg, the damped update is
-    * tele + ⌈85·S/100⌋ ([[intRoundHalfAway]], tele precomputed once)
-    * — both engines replay the identical integer recurrence, so the
-    * per-cluster argmax (rank DESC, doc_id) is engine-exact. Output
-    * per multi-member family: size, the PR canonical, its rank, and
-    * whether it DIFFERS from min-id — the audit column that prices
-    * switching survivor rules (x152's convention). Scale shape: the
-    * x2/x14 pair graph (banded in production via the x6 LSH path),
-    * then 10 bounded join+aggregate rounds over the edge list —
-    * O(E) per round, no corpus-wide window, nothing driver-side but
-    * the two scalars. Crafted star graph (hub beats min-id leaf)
-    * pinned in EngineSpec. */
-  val x178PagerankCanonical: Q = (s, d) =>
-    pagerankCanonicalOn(s,
-      corpusWithDupes(s, d).filter(col("doc_id") % 1000000 < 200))
-
-  /** [[x178PagerankCanonical]] core over any (doc_id, text) frame. */
-  private[graft] def pagerankCanonicalOn(s: SparkSession,
-      docs: DataFrame): DataFrame = {
-    import graft.ml.LogFit
-    val corpus = docs.select(col("doc_id"), col("text")).localCheckpoint()
-    val pairs = graft.dedup.NearDup.ngramJaccardPairs(corpus)
-      .localCheckpoint()
-    val edges = pairs.select(col("id_a").as("a"), col("id_b").as("b"))
-      .unionByName(pairs.select(col("id_b").as("a"), col("id_a").as("b")))
-      .localCheckpoint()
-    val deg = edges.groupBy(col("a").as("doc_id"))
-      .agg(count(lit(1)).as("dg"))
-    val nodes = corpus.select(col("doc_id"))
-      .join(deg, Seq("doc_id"), "left")
-      .na.fill(0L, Seq("dg")).localCheckpoint()
-    val nN = nodes.count()
-    val teleQ = LogFit.halfAway(BigInt(15L) * 1000000000L,
-      BigInt(100L) * nN).toLong
-    val r0 = LogFit.halfAway(BigInt(1000000000L), BigInt(nN)).toLong
-    var r = nodes.select(col("doc_id"), col("dg"), lit(r0).as("r"))
-    for (_ <- 1 to 10) {
-      // isolated nodes (dg = 0) send no mass — filter BEFORE the div
-      // so the projection never evaluates r div 0 (ANSI mode)
-      val sq = edges
-        .join(r.filter(col("dg") > 0L).select(col("doc_id").as("a"),
-          call_function("div", col("r"), col("dg")).as("share")), Seq("a"))
-        .groupBy(col("b").as("doc_id")).agg(sum(col("share")).as("sq"))
-      // NO per-iteration checkpoint (r11, guide §2.4/§5): the 10-step
-      // recurrence is data-INdependent (nothing is collected between
-      // steps), each iterate references the previous r exactly once,
-      // and edges/nodes are already pinned — so the lineage grows
-      // linearly (~5 operators/step) and ONE job at the end executes
-      // the whole chain, instead of 10 driver-blocking checkpoint
-      // materializations of a node-sized relation.
-      r = nodes.join(sq, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("dg"),
-          (lit(teleQ) + intRoundHalfAway(
-            lit(85L) * coalesce(col("sq"), lit(0L)), lit(100L))).as("r"))
-    }
-    graft.dedup.NearDup.clusters(corpus, pairs)
-      .select(col("doc_id"), col("canonico").as("cluster"))
-      .join(r.select(col("doc_id"), col("r")), Seq("doc_id"))
-      .groupBy(col("cluster"))
-      .agg(count(lit(1)).as("size"),
-        max(struct(col("r"), (-col("doc_id")).as("nid"))).as("m"))
-      .filter(col("size") >= 2L)
-      .select(col("cluster"), col("size"),
-        (-col("m.nid")).as("pr_canonical"),
-        (col("m.r").cast("double") / 1e9).as("pr_rank"),
-        ((-col("m.nid")) === col("cluster")).as("agree"))
-      .orderBy(col("cluster"))
-  }
-
-  /** X177: packing-policy efficiency table — the OTHER half of the
-    * decision x25/x121/x165 instrument: a trainer either concatenates
-    * and chunks (zero padding, x121's attention contamination) or
-    * packs whole documents into padded sequences (no contamination,
-    * padding waste — Krell et al. 2021's histogram-packing setting).
-    * Per policy at b = 256: sequences, padding tokens, and waste
-    * share. `single_doc` = one padded sequence per doc (the naive
-    * baseline); `nfd` = next-fit-decreasing bin packing computed
-    * EXACTLY on the bounded length histogram (per length class the
-    * fill is closed-form integer arithmetic — current-bin fill, full
-    * bins of ⌊b/L⌋, carry the remainder — so the whole simulation is
-    * ≤ 256 exact steps, driver-side on the collected histogram, and
-    * the oracle replays it as a recursive CTE); `concat_chunk` = x25's
-    * splitter (pads only the final sequence; its real cost is x121's
-    * boundary table). Padded policies truncate docs at b (that loss
-    * is x165's table); concat never truncates — stated per row by
-    * construction. Waste ordering nfd ≤ single_doc and the 100×100
-    * closed form (50 bins, 2800 pad) pinned in EngineSpec. Scale
-    * shape: one corpus scan onto a ≤ b-row histogram; everything
-    * after is bounded integer arithmetic. */
-  val x177PackingPolicies: Q = (s, d) =>
-    packingPoliciesOn(s, Tables.documents(s, d), 256L)
-
-  /** [[x177PackingPolicies]] core (exposed for the EngineSpec pins). */
-  private[graft] def packingPoliciesOn(s: SparkSession, docs: DataFrame,
-      b: Long): DataFrame = {
-    import graft.ml.LogFit
-    val hist = docs
-      .select(least(tokenCount(col("text")).cast("long"), lit(b)).as("l"))
-      .filter(col("l") > 0)
-      .groupBy(col("l")).agg(count(lit(1)).as("c"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(-_._1)
-    val nDocs = hist.map(_._2).sum
-    val used = hist.map { case (l, c) => l * c }.sum
-    val tot = docs.select(tokenCount(col("text")).cast("long").as("t"))
-      .filter(col("t") > 0).agg(sum(col("t"))).head().getLong(0)
-    val concatSeqs = (tot + b - 1) / b
-    var bins = 0L; var rem = 0L
-    for ((l, c0) <- hist) {
-      var c = c0
-      if (rem >= l) { val k1 = math.min(c, rem / l); c -= k1; rem -= k1 * l }
-      if (c > 0) {
-        val perBin = b / l
-        val nb = (c + perBin - 1) / perBin
-        bins += nb
-        rem = b - (c - (nb - 1) * perBin) * l
-      }
-    }
-    def waste(pad: Long, seqs: Long): Double =
-      LogFit.halfAway(BigInt(pad) * 10000L, BigInt(seqs) * b)
-        .toDouble / 1e4
-    s.createDataFrame(Seq(
-        ("concat_chunk", concatSeqs, concatSeqs * b - tot,
-          waste(concatSeqs * b - tot, concatSeqs)),
-        ("nfd", bins, bins * b - used, waste(bins * b - used, bins)),
-        ("single_doc", nDocs, nDocs * b - used,
-          waste(nDocs * b - used, nDocs))))
-      .toDF("policy", "n_seqs", "n_pad", "waste")
-      .orderBy(col("policy"))
-  }
-
-  /** X176: embedding-distribution drift over the learned quantizer
-    * (the measurement inside MAUVE — Pillutla et al. 2021: compare
-    * two populations by their histograms over a shared embedding
-    * QUANTIZATION, here the persisted 16-cell IVF coarse quantizer
-    * instead of MAUVE's ad-hoc k-means): Jensen-Shannon divergence in
-    * bits between the early and late vector halves' Laplace-smoothed
-    * cell occupancies. The drift-family slot this fills: x68 watches
-    * a quality histogram, x175 searches text features, this watches
-    * the EMBEDDING space — a feed whose vectors migrate cells (new
-    * topics, new encoder version) alarms here before any text
-    * statistic moves. Numerics are x55's JSD contract exactly
-    * (per-cell ln(p/m) quantized 1e-6, exact-integer KL halves,
-    * one dequantize + nats→bits seam). Identical populations ⇒ 0 and
-    * disjoint cells ⇒ 1 bit, both pinned in EngineSpec via
-    * [[embedDriftOn]]. Scale shape: one assignment read (the
-    * persisted store — no training here), a 16-row smoothed grid,
-    * driver-free. */
-  val x176EmbedDrift: Q = (s, d) => {
-    val cells = graft.ml.IvfIndex.loadCached(s, ensureIvfIndex(s, d)).cells
-    val split = (cells.agg(max(col("vec_id"))).head().getLong(0) + 1L) / 2L
-    val spine = graft.ml.IvfIndex.loadCached(s, ensureIvfIndex(s, d))
-      .centroids.select(col("cid").as("cell"))
-    embedDriftOn(cells.select(col("cell"),
-      when(col("vec_id") >= split, 1L).otherwise(0L).as("grp")), spine)
-  }
-
-  /** [[x176EmbedDrift]] core over any (cell, grp ∈ {0, 1}) assignment
-    * plus the cell spine (exposed for the EngineSpec pins). */
-  private[graft] def embedDriftOn(assign: DataFrame,
-      spine: DataFrame): DataFrame = {
-    val ln2 = 0.6931471805599453
-    val cnts = spine
-      .join(assign.groupBy(col("cell"))
-        .agg(sum(lit(1L) - col("grp")).as("a"), sum(col("grp")).as("bq")),
-        Seq("cell"), "left")
-      .na.fill(0L, Seq("a", "bq"))
-    val tot = cnts.agg(sum(col("a")).as("na"), sum(col("bq")).as("nb"),
-      count(lit(1)).as("k"))
-    val p = (col("a") + 1L).cast("double") / (col("na") + col("k")).cast("double")
-    val q = (col("bq") + 1L).cast("double") / (col("nb") + col("k")).cast("double")
-    val m = (p + q) / lit(2)
-    cnts.crossJoin(broadcast(tot))
-      .withColumn("tp", round(log(p / m) * 1e6, 0).cast("long"))
-      .withColumn("tq", round(log(q / m) * 1e6, 0).cast("long"))
-      .groupBy(lit(1).as("one"))
-      .agg(max(col("na")).as("n_early"), max(col("nb")).as("n_late"),
-        max(col("k")).as("kk"),
-        sum((col("a") + 1L) * col("tp")).as("hp"),
-        sum((col("bq") + 1L) * col("tq")).as("hq"))
-      .select(col("n_early"), col("n_late"),
-        ((intRoundHalfAway(col("hp"), col("n_early") + col("kk"))
-          + intRoundHalfAway(col("hq"), col("n_late") + col("kk")))
-          .cast("double") / lit(2e6) / lit(ln2)).as("jsd_bits"))
-  }
-
-  /** X175: classifier two-sample drift test (C2ST — Lopez-Paz &
-    * Oquab 2017, "Revisiting classifier two-sample tests"): train the
-    * engine's own logistic model to DISTINGUISH the early and late
-    * corpus halves and read held-out accuracy as the drift statistic
-    * — at the null (stationary corpus) acc ≈ ½, and
-    * z = (2·acc − 1)·√n_test is standard normal, so z > 1.96 is a
-    * calibrated drift alarm. This is the model-powered member of the
-    * drift family: x68's PSI watches one engineered histogram, C2ST
-    * searches the classifier's whole feature space for ANY separating
-    * direction. Same trainer, features, and quantization contract as
-    * x108 (20 full-batch GD steps, 1e-6-quantized σ), labels = the
-    * x68 early/late halves, train/test = the md5-balde split. Output:
-    * one row — split sizes, held-out accuracy, z, and the alarm.
-    * Crafted vocabulary-shift corpus alarms and the stationary
-    * fixture stays calm (both pinned in EngineSpec). Scale shape:
-    * x108's exactly — feature scan + 20 driver-pinned gradient
-    * aggregations + one scoring scan. */
-  val x175DriftC2st: Q = (s, d) =>
-    driftC2stOn(s, Tables.documents(s, d))
-
-  /** [[x175DriftC2st]] core over any (doc_id, text) frame (exposed
-    * for the EngineSpec crafted-shift pin). */
-  private[graft] def driftC2stOn(s: SparkSession,
-      docs0: DataFrame): DataFrame = {
-    import graft.ml.LogFit
-    val docs = docs0.select(col("doc_id"), col("text"))
-    val split = (docs.agg(max(col("doc_id"))).head().getLong(0) + 1L) / 2L
-    val balde = pmod(
-      conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long"), lit(100L))
-    // ONE feature build (r12, guide §2.4): the checkpointed full
-    // feature table feeds BOTH the train filter and the held-out
-    // scoring pass — the former shape checkpointed only the train
-    // side, so the test-side clfScores re-ran the whole clfFeatures
-    // chain (second corpus scan + two aggregations + join).
-    val tfall = clfFeatures(docs).drop("y")
-      .withColumn("y", when(col("doc_id") >= split, 1L).otherwise(0L))
-      .localCheckpoint()
-    val trainTf = tfall.filter(balde < 90).localCheckpoint()
-    val nTrain = trainTf.count()
-    val w = trainQualityClf(trainTf, nTrain)
-    val wdf = s.createDataFrame(
-        w.toSeq.zipWithIndex.map { case (v, b) => (b.toLong, v) })
-      .toDF("bucket", "wb")
-    val agg = clfScores(tfall.filter(balde >= 90), wdf)
-      .agg(count(lit(1)).as("n_test"),
-        sum(when((col("pq") >= 500000L) === (col("y") === 1L), 1L)
-          .otherwise(0L)).as("n_corr")).head()
-    val (nTest, nCorr) = (agg.getLong(0), agg.getLong(1))
-    val accQ = LogFit.halfAway(BigInt(nCorr) * 10000L, BigInt(nTest))
-      .toLong
-    val zQ = LogFit.qScaled((2.0 * (accQ.toDouble / 1e4) - 1.0)
-      * math.sqrt(nTest.toDouble), 1e4)
-    s.createDataFrame(Seq((nTrain, nTest, accQ.toDouble / 1e4,
-        zQ.toDouble / 1e4, zQ > 19600L)))
-      .toDF("n_train", "n_test", "test_acc", "z_score", "drift")
-  }
-
-  /** X68: quality-distribution drift (PSI) — the population-stability
-    * index between the quality-score histograms of the early and late
-    * corpus halves, the monitoring number a production ingest alarms
-    * on ("did the crawl's quality profile shift since the last
-    * snapshot?"). Bins are fixed quality deciles taken on the
-    * integer-1e4 quality representation (q4 div 1000 — pure integer
-    * binning, so no doc can land on a bin edge differently per
-    * engine); both halves are Laplace-(+1)-smoothed over the explicit
-    * 10-bin grid so empty bins contribute finitely. Determinism: the
-    * ln argument is an exact integer ratio (c+1 counts and n+10
-    * totals), quantized at 1e6 ([[x39UnigramLogppl]] recipe); each
-    * bin's (p−q)·ln term is then quantized to an integer so the
-    * PSI total is an order-free integer sum. Shape: ONE corpus scan
-    * collapsing onto a 10-row grid; everything downstream is
-    * grid-local. */
-  val x68QualityPsi: Q = (s, d) => {
-    val docs = Tables.documents(s, d)
-    val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-    val split = (maxId + 1) / 2
-    val counts = docs
-      .select(
-        least(call_function("div",
-          round(qualityScore(col("text"), stopwords) * 1e4, 0).cast("long"),
-          lit(1000L)), lit(9L)).as("bin"),
-        when(col("doc_id") < split, 1L).otherwise(0L).as("early"))
-      .groupBy(col("bin"))
-      .agg(sum(col("early")).as("c_early"),
-        sum(lit(1L) - col("early")).as("c_late"))
-    val grid = s.range(0, 10).select(col("id").as("bin"))
-      .join(counts, Seq("bin"), "left")
-      .na.fill(0L, Seq("c_early", "c_late"))
-      .crossJoin(broadcast(docs.agg(
-        sum(when(col("doc_id") < split, 1L).otherwise(0L)).as("n_early"),
-        sum(when(col("doc_id") >= split, 1L).otherwise(0L)).as("n_late"))))
-    val p = (col("c_early") + 1).cast("double") / (col("n_early") + 10).cast("double")
-    val q = (col("c_late") + 1).cast("double") / (col("n_late") + 10).cast("double")
-    val lnrQ = round(log(
-      ((col("c_early") + 1) * (col("n_late") + 10)).cast("double")
-        / ((col("c_late") + 1) * (col("n_early") + 10)).cast("double")) * 1e6, 0)
-      .cast("long")
-    val wAll = Window.rowsBetween(
-      Window.unboundedPreceding, Window.unboundedFollowing)
-    grid
-      .withColumn("contrib_q",
-        round((p - q) * lnrQ.cast("double") * 1e2, 0).cast("long"))
-      .select(col("bin"), col("c_early"), col("c_late"),
-        (col("contrib_q").cast("double") / 1e8).as("contrib"),
-        (sum(col("contrib_q")).over(wAll).cast("double") / 1e8).as("psi"))
-      .orderBy(col("bin"))
-  }
-
-  /** X69: centroid prototypicality — cosine of every embedding to its
-    * own label centroid, ranked within the label: the SemDeDup
-    * "keep the prototype / inspect the fringe" score, and the triage
-    * table a curation run reads to pick per-cluster exemplars and
-    * spot mislabeled outliers (the serving-side twin of x57's
-    * corpus-level z-trim). Determinism: vectors quantize to integer
-    * 1e-6 units, the centroid is the UNNORMALIZED per-label sum
-    * vector (cosine is scale-invariant, so Σq/n and Σq give the same
-    * angle — and the sum stays integer-exact); every inner product
-    * accumulates in decimal(38,0) (DuckDB's HUGEINT twin) so no
-    * order-dependent double sum and no 64-bit overflow exists at any
-    * corpus size, with ONE double division + sqrt at the end. Shape:
-    * explode → (label,dim)-keyed centroid aggregation (|labels|×d
-    * rows, pinned driver-local — the x55 pin, so the corpus is
-    * scanned ONCE more for scoring, not once per reference) →
-    * broadcast join back → vec-keyed aggregation. The ranking window
-    * partitions by label — at production scale the top-k selection
-    * would run on [[graft.plans.TopK.perGroup]] instead; the full
-    * ranking is the audit-sized output here. */
-  val x69Prototypicality: Q = (s, d) => {
-    val qq = spread(s, Tables.embeddings(s, d))
-      .select(col("vec_id"), col("label"),
-        posexplode(col("embedding")).as(Seq("i", "xi")))
-      .withColumn("qi", round(col("xi").cast("double") * 1e6, 0).cast("long"))
-    val cent = {
-      val c = qq.groupBy(col("label"), col("i")).agg(sum(col("qi")).as("s_li"))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(c.collect().toSeq.asJava, c.schema)
-    }
-    val cn = cent.groupBy(col("label"))
-      .agg(sum(col("s_li").cast("decimal(38,0)") * col("s_li")).as("n2"))
-      .select(col("label"), col("n2").cast("double").as("n2"))
-    val pv = qq.join(broadcast(cent), Seq("label", "i"))
-      .groupBy(col("vec_id"), col("label"))
-      .agg(sum(col("qi").cast("decimal(38,0)") * col("s_li")).as("num"),
-        sum(col("qi").cast("decimal(38,0)") * col("qi")).as("qn2"))
-      .select(col("vec_id"), col("label"), col("num").cast("double").as("num"),
-        col("qn2").cast("double").as("qn2"))
-    val cosRaw = col("num") / (sqrt(col("qn2")) * sqrt(col("n2")))
-    pv.join(broadcast(cn), Seq("label"))
-      .select(col("vec_id"), col("label"),
-        round(cosRaw, 6).as("cos_centroid"),
-        row_number().over(Window.partitionBy(col("label"))
-          .orderBy(cosRaw.desc, col("vec_id"))).as("rank_in_label"))
-      .orderBy(col("label"), col("rank_in_label"))
-  }
-
-  /** X70: mixture-realized sampling — materialize the UniMax-α=½
-    * mixture ([[x50MixtureWeights]]'s sqrt-share epochs) into an
-    * actual sampled corpus via deterministic hash thresholding
-    * (u = md5₃₂/2³² < min(rate, 1), the x61 selector), and report per
-    * source what the realized sample holds vs the target. This is the
-    * operator that turns a mixture DESIGN into a training corpus —
-    * downsampled sources keep a rate-sized slice, upsampled ones
-    * (rate ≥ 1, which x50 expresses as epochs > 1) keep everything
-    * and the epoch remainder is a repeat-factor downstream, not a
-    * selection. Determinism: sqrt quantizes to integer 1e-6 units
-    * before the denominator sum (order-free — x50's raw double fold
-    * is driver-side and ordered; here the sum must be engine-exact),
-    * and the rate arithmetic is the same parenthesized IEEE ops on
-    * exact integers in both engines; u < rate is then bit-exact.
-    * Shape: one |sources|-row stats aggregation, a broadcast of the
-    * rate table, one row-local selection scan — nothing
-    * corpus-sized shuffles. */
-  val x70MixtureSample: Q = (s, d) => {
-    val docs = Tables.documents(s, d)
-    val stats = docs.groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(tokenCount(col("text")).cast("long")).as("tok"))
-      .withColumn("sqq",
-        round(sqrt(col("tok").cast("double")) * 1e6, 0).cast("long"))
-    val rates = stats
-      .crossJoin(broadcast(stats.agg(sum(col("sqq")).as("denomq"),
-        sum(col("tok")).as("budget"))))
-      .select(col("source"), col("n_docs"), col("tok"),
-        least(col("budget").cast("double")
-          * (col("sqq").cast("double") / col("denomq").cast("double"))
-          / col("tok").cast("double"), lit(1.0)).as("rate"))
-    docs
-      .join(broadcast(rates), Seq("source"))
-      .withColumn("sel",
-        graft.dedup.NearDup.md5Hash32(col("doc_id").cast("string"))
-          .cast("double") / lit(4294967296.0) < col("rate"))
-      .groupBy(col("source"), col("n_docs"), col("tok"), col("rate"))
-      .agg(sum(when(col("sel"), 1L).otherwise(0L)).as("n_kept"),
-        sum(when(col("sel"), tokenCount(col("text")).cast("long"))
-          .otherwise(0L)).as("tok_kept"))
-      .select(col("source"), col("n_docs"), col("tok"),
-        round(col("rate"), 6).as("rate"), col("n_kept"), col("tok_kept"))
-      .orderBy(col("source"))
-  }
-
-  /** X71: split-leakage audit — near-duplicate pairs that STRADDLE
-    * the deterministic train/val/test split (x36's hash buckets):
-    * an eval doc with a train near-dup is contamination that
-    * silently inflates every benchmark run on the split, which is
-    * why Lee et al. (dedup) and the GPT-3/PaLM appendices all report
-    * exactly this table before training. The dupe fixture makes the
-    * leak real: copies hash to independent buckets, so ~10% of each
-    * doc's copies land across the split boundary. Shape: pair
-    * generation is the x4 inverted-index primitive (at production
-    * scale the x2 banded-LSH candidates slot in unchanged — the
-    * audit only consumes (id_a, id_b) pairs); split attach is a
-    * doc-keyed join AQE sizes (pairs are a sliver of the corpus);
-    * the report collapses onto 3 rows. */
-  val x71SplitLeakage: Q = (s, d) => {
-    val corpus = corpusWithDupes(s, d).filter(col("doc_id") % 1000000 < 200)
-    val balde = pmod(
-      conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long"), lit(100L))
-    val splits = corpus.select(col("doc_id"),
-      when(balde < 90, "train").when(balde < 95, "val")
-        .otherwise("test").as("split"))
-    val pairs = graft.dedup.NearDup.ngramJaccardPairs(spread(s, corpus))
-    val cross = pairs
-      .join(splits.select(col("doc_id").as("id_a"), col("split").as("split_a")),
-        Seq("id_a"))
-      .join(splits.select(col("doc_id").as("id_b"), col("split").as("split_b")),
-        Seq("id_b"))
-      .filter(col("split_a") =!= col("split_b"))
-    val leaked = cross
-      .select(col("id_a").as("doc_id"), col("split_a").as("split"))
-      .unionByName(cross
-        .select(col("id_b").as("doc_id"), col("split_b").as("split")))
-      .distinct()
-      .groupBy(col("split")).agg(count(lit(1)).as("n_leaked"))
-    splits.groupBy(col("split")).agg(count(lit(1)).as("n_docs"))
-      .join(leaked, Seq("split"), "left")
-      .na.fill(0L, Seq("n_leaked"))
-      .select(col("split"), col("n_docs"), col("n_leaked"),
-        (intRoundHalfAway(col("n_leaked") * 10000L, col("n_docs"))
-          .cast("double") / 1e4).as("leak_frac"))
-      .orderBy(col("split"))
-  }
-
-  /** X72: edit-distance verification of near-dup candidates — the
-    * second-opinion metric a production dedup run applies before
-    * destructive removal: n-gram Jaccard (set semantics) can be
-    * fooled by shuffled or lightly-reordered text, while relative
-    * Levenshtein (sequence semantics) prices every insert / delete /
-    * substitute. Candidates come in at a permissive J ≥ 0.3 and are
-    * confirmed iff lev / max(len) ≤ 0.2. Shape: candidate generation
-    * is the inverted-index primitive (the x2 banded-LSH path slots in
-    * at scale); text attaches only to the CANDIDATE SLIVER via two
-    * doc-keyed joins, so the O(len²) dynamic program — Spark's
-    * codegen'd levenshtein — runs per colliding pair, never per
-    * corpus pair. Determinism: lev and lengths are integers; the
-    * relative distance rounds in pure BIGINT. */
-  val x72EditVerify: Q = (s, d) => {
-    val corpus = corpusWithDupes(s, d).filter(col("doc_id") % 1000000 < 200)
-    graft.dedup.NearDup
-      .ngramJaccardPairs(spread(s, corpus), threshold = 0.3)
-      .join(corpus.select(col("doc_id").as("id_a"), col("text").as("text_a")),
-        Seq("id_a"))
-      .join(corpus.select(col("doc_id").as("id_b"), col("text").as("text_b")),
-        Seq("id_b"))
-      .select(col("id_a"), col("id_b"), col("jaccard"),
-        levenshtein(col("text_a"), col("text_b")).cast("long").as("lev"),
-        greatest(length(col("text_a")), length(col("text_b")))
-          .cast("long").as("max_len"))
-      .withColumn("rel_edit",
-        intRoundHalfAway(col("lev") * 10000L, col("max_len"))
-          .cast("double") / 1e4)
-      .withColumn("confirmed", col("rel_edit") <= 0.2)
-      .orderBy(col("id_a"), col("id_b"))
-  }
-
-  /** X73: dup-graph diagnostics — the degree histogram of the
-    * near-dup pair graph plus the size histogram of its connected
-    * components: the "dup landscape" report read before committing to
-    * a dedup threshold (a fat degree tail means hub documents —
-    * boilerplate-heavy pages pairing with everything, where dropping
-    * the threshold explodes candidate verification cost; component
-    * sizes separate pairwise re-uploads from viral copy families,
-    * which decide whether keep-one-per-component loses real mass).
-    * Shape: degrees are a doc-keyed aggregation of the pair SLIVER
-    * (never the corpus), both histograms collapse onto k-keyed
-    * handfuls of rows, and components reuse the x14 CC machinery
-    * (O(log diameter) rounds). */
-  val x73DupGraphStats: Q = (s, d) => {
-    // dup corpus EXTENDED with 60%-prefix truncations (+3M ids): a
-    // prefix of an n-token doc has J = (0.6n−2)/(n−2) against its
-    // base — straddling the 0.5 threshold with document length, so
-    // degrees and component sizes actually vary (the all-copies
-    // corpus alone yields one uniform family shape). The prefix cut
-    // is integer arithmetic (3n div 5) so both engines cut the same
-    // token.
-    val base = corpusWithDupes(s, d).filter(col("doc_id") % 1000000 < 200)
-    val trunc = Tables.documents(s, d)
-      .filter(col("doc_id") % 1000000 < 200)
-      .select((col("doc_id") + 3000000L).as("doc_id"),
-        array_join(slice(wsTokens(col("text")), lit(1),
-          call_function("div", size(wsTokens(col("text"))).cast("long") * 3,
-            lit(5L)).cast("int")), " ").as("text"))
-    val corpus = spread(s, base.unionByName(trunc))
-    // the pair sliver feeds BOTH histograms and every CC round —
-    // left lazy, the shingle inverted-index self-join re-executes per
-    // consumer. Materialize it once, cluster-side (localCheckpoint,
-    // the CC-loop pattern — NOT a driver pin: pairs scale with the
-    // corpus).
-    val pairs = graft.dedup.NearDup.ngramJaccardPairs(corpus)
-      .localCheckpoint()
-    val deg = pairs.select(col("id_a").as("doc_id"))
-      .unionByName(pairs.select(col("id_b").as("doc_id")))
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("k"))
-      .groupBy(col("k")).agg(count(lit(1)).as("n"))
-      .select(lit("degree").as("stat"), col("k"), col("n"))
-    val comp = graft.dedup.NearDup.clusters(corpus, pairs)
-      .groupBy(col("canonico")).agg(count(lit(1)).as("sz"))
-      .filter(col("sz") >= 2)
-      .groupBy(col("sz")).agg(count(lit(1)).as("n"))
-      .select(lit("component").as("stat"), col("sz").as("k"), col("n"))
-    deg.unionByName(comp).orderBy(col("stat"), col("k"))
-  }
-
-  /** X74: SQ8 serving-quality audit — recall@10 of int8-quantized
-    * cosine top-k against the full-precision ranking, per query: the
-    * acceptance test run before an x43-quantized copy replaces the
-    * float index in serving (FAISS's standard SQ8 evaluation). Both
-    * rankings come off ONE scored sliver (queries broadcast, the
-    * x5 shape); the quantized score's numerator/norms are exact
-    * integer folds (|q| ≤ 127, d=64 ⇒ ≤ 2²⁰ per term — no overflow
-    * at any dimension that fits a vector register), so the only
-    * doubles are the final quotient, mirrored op-for-op in the
-    * oracle. Recall is an integer intersection count. At 100 TB the
-    * same audit runs on a stratified query sample — the scored side
-    * stays (queries × corpus)-sliver-sized, never corpus². */
-  val x74Sq8Recall: Q = (s, d) => {
-    val qv = spread(s, Tables.embeddings(s, d))
-      .withColumn("mx",
-        array_max(transform(col("embedding"), x => abs(x.cast("double")))))
-      .filter(col("mx") > 0)
-      .withColumn("q", transform(col("embedding"),
-        x => round(x.cast("double") * 127 / col("mx"), 0).cast("long")))
-      .withColumn("qn",
-        aggregate(col("q"), lit(0L), (a, x) => a + x * x))
-      .select(col("vec_id"), col("embedding"), col("q"), col("qn"))
-    val queries = qv.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        col("q").as("qq"), col("qn").as("qqn"))
-    val scored = qv
-      .select(col("vec_id").as("nid"), col("embedding").as("ne"),
-        col("q").as("nq"), col("qn").as("nqn"))
-      .crossJoin(broadcast(queries))
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("score_f", round(cosineSim(col("qe"), col("ne")), 4))
-      .withColumn("num", aggregate(zip_with(col("qq"), col("nq"),
-        (a, b) => a * b), lit(0L), (acc, x) => acc + x))
-      .withColumn("score_q", col("num").cast("double")
-        / (sqrt(col("qqn").cast("double")) * sqrt(col("nqn").cast("double"))))
-    val wf = Window.partitionBy(col("qid"))
-      .orderBy(col("score_f").desc, col("nid"))
-    val wq = Window.partitionBy(col("qid"))
-      .orderBy(col("score_q").desc, col("nid"))
-    val ranked = scored
-      .withColumn("rf", row_number().over(wf))
-      .withColumn("rq", row_number().over(wq))
-    ranked
-      .groupBy(col("qid"))
-      .agg(sum(when(col("rf") <= 10 && col("rq") <= 10, 1L).otherwise(0L))
-        .as("n_match"))
-      .select(col("qid"), col("n_match"),
-        (col("n_match").cast("double") / 10).as("recall_at_10"))
-      .orderBy(col("qid"))
-  }
-
-  /** X75: IVF cell-balance audit — per-cell population share and the
-    * imbalance factor max/mean after the x13 Lloyd training: the
-    * nlist-tuning report (a cell holding 10× its share makes every
-    * probe touching it pay 10× verification — the knob a production
-    * ANN deployment watches next to x62's recall table). The cell
-    * census is ONE map-side-combinable aggregation onto nCells rows,
-    * pinned driver-local; every ratio is an exact integer rational
-    * rounded in BIGINT. */
-  val x75IvfBalance: Q = (s, d) => {
-    val counts = {
-      // census the PERSISTED index (x31's build-once contract — the
-      // first caller per sf-dir pays the Lloyd build; the audit is a
-      // cells-table scan, which is also the production shape: the
-      // balance report describes the index being served, not a fresh
-      // retrain). The oracle's from-scratch Lloyd chain matching this
-      // is exactly the persisted≡fresh identity x31 already pins.
-      val c = graft.ml.IvfIndex.loadCached(s, ensureIvfIndex(s, d)).cells
-        .groupBy(col("cell")).agg(count(lit(1)).as("n_vecs"))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(c.collect().toSeq.asJava, c.schema)
-    }
-    counts
-      .crossJoin(broadcast(counts.agg(sum(col("n_vecs")).as("total"),
-        max(col("n_vecs")).as("mx"), count(lit(1)).as("nc"))))
-      .select(col("cell"), col("n_vecs"),
-        (intRoundHalfAway(col("n_vecs") * 10000L, col("total"))
-          .cast("double") / 1e4).as("share"),
-        (intRoundHalfAway(col("mx") * col("nc") * 10000L, col("total"))
-          .cast("double") / 1e4).as("imbalance"))
-      .orderBy(col("cell"))
-  }
-
-  /** X76: sketched vocabulary census — per-source token mass, EXACT
-    * distinct-type count, and the HyperLogLog estimate next to it
-    * with a Spark-side `within_bound` check (the a20b sketch-twin
-    * contract: internals are engine-specific, so the oracle pins the
-    * exact side and the bound, never sketch bits). This is the scale
-    * path for every type-counting operator (x44/x67): an exact
-    * distinct shuffles the full token set — at a 10⁸-type corpus
-    * vocabulary that is the bottleneck — while the HLL sketch is a
-    * fixed 2ᵖ-register relation with map-side combine, one per
-    * source, at any corpus size. The 0.2 bound is generous against
-    * the default 5% rsd; a production census would also fuse this
-    * into the x54 fertility scan (same grouping). */
-  val x76VocabSketch: Q = (s, d) =>
-    spread(s, Tables.documents(s, d))
-      .select(col("source"), explode(wsTokens(col("text"))).as("w"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_tok"),
-        count_distinct(col("w")).as("n_types"),
-        approx_count_distinct(col("w")).as("approx_types"))
-      .select(col("source"), col("n_tok"), col("n_types"),
-        (abs(col("approx_types") - col("n_types")).cast("double")
-          <= greatest(col("n_types").cast("double") * 0.2, lit(4.0)))
-          .as("within_bound"))
-      .orderBy(col("source"))
-
-  /** X77: soft dedup — one survivor per near-dup component, carrying
-    * its family's multiplicity as a training weight: the alternative
-    * to hard removal when duplication frequency IS signal (a page
-    * re-uploaded 40× is evidence of importance a plain keep-one
-    * discards; weighting the survivor by count — or log-count, a
-    * downstream choice — preserves it without re-paying 40 forward
-    * passes on identical text). Composes the x14 CC labels with a
-    * component-size aggregation: both sides are doc-keyed, the size
-    * table is component-keyed and AQE-sizes its join; nothing beyond
-    * the x24 survivor machinery is scanned. */
-  val x77SoftDedupWeights: Q = (s, d) => {
-    val labels = graft.dedup.NearDup.clusters(
-      corpusWithDupes(s, d).filter(col("doc_id") % 1000000 < 200),
-      ngramJaccardPairs(s, d))
-    val sizes = labels.groupBy(col("canonico")).agg(count(lit(1)).as("peso"))
-    labels.filter(col("doc_id") === col("canonico"))
-      .join(sizes, Seq("canonico"))
-      .select(col("doc_id"), col("peso"),
-        (round(log(col("peso").cast("double") + 1) * 1e6, 0).cast("double")
-          / 1e6).as("log_peso"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** X78: Gopher document-rule bundle — the remaining Rae et al.
-    * Table-A1 document filters not already carried by x19/x41
-    * (repetition): word-count bounds [50, 100k], mean word length
-    * [3, 10], ≥ 80% of words containing an alphabetic character,
-    * symbol-to-word ratio ≤ 0.1, and ≥ 2 distinct stopwords present.
-    * Every PREDICATE is evaluated in pure integer cross-multiplied
-    * form (n_alpha·5 ≥ n_words·4, n_chars between 3·n and 10·n) so no
-    * ratio ever rounds before a comparison; the reported ratios round
-    * via the BIGINT helper. Row-local single scan — the whole bundle
-    * runs at parquet-scan speed at any corpus size, the same contract
-    * as x8/x26. */
-  val x78GopherRules: Q = (s, d) =>
-    Tables.documents(s, d)
-      .select(col("doc_id"), wsTokens(col("text")).as("toks"))
-      .select(col("doc_id"),
-        size(col("toks")).cast("long").as("n_words"),
-        aggregate(transform(col("toks"), t => length(t).cast("long")),
-          lit(0L), (a, x) => a + x).as("n_chars"),
-        size(filter(col("toks"), t => t.rlike("[A-Za-z]")))
-          .cast("long").as("n_alpha"),
-        size(filter(col("toks"), t => t.rlike("[#…]")))
-          .cast("long").as("n_sym"),
-        size(array_intersect(array_distinct(col("toks")),
-          array(stopwords.map(lit): _*))).cast("long").as("n_stop"))
-      .withColumn("nw", greatest(col("n_words"), lit(1L)))
-      .select(col("doc_id"), col("n_words"),
-        (intRoundHalfAway(col("n_chars") * 10000L, col("nw"))
-          .cast("double") / 1e4).as("mean_word_len"),
-        (intRoundHalfAway(col("n_alpha") * 10000L, col("nw"))
-          .cast("double") / 1e4).as("alpha_frac"),
-        col("n_stop"),
-        (col("n_words").between(50L, 100000L)
-          && col("n_chars") >= col("nw") * 3
-          && col("n_chars") <= col("nw") * 10
-          && col("n_alpha") * 5 >= col("nw") * 4
-          && col("n_sym") * 10 <= col("nw")
-          && col("n_stop") >= 2).as("passes"))
-      .orderBy(col("doc_id"))
-
-  /** X79: language-ID confidence margin — x7's marker-score decision
-    * with the TOP-1 − TOP-2 margin and an ambiguity flag, the
-    * fastText-style confidence gate a curation run thresholds on
-    * before trusting a language route. All marker scores share the
-    * SAME denominator (the doc's token count), so best/second/margin
-    * are pure integer comparisons and one BIGINT-rounded ratio — no
-    * double ever decides a route. Row-local scan, x7's plan. */
-  val x79LangMargin: Q = (s, d) => {
-    val toksL = wsTokens(lower(col("text")))
-    val counts = markerSets.map { case (lang, ms) =>
-      size(filter(toksL, t => t.isin(ms.map(x => x: Any): _*)))
-        .cast("long").as(s"c_$lang")
-    }
-    val cs = markerSets.map { case (lang, _) => col(s"c_$lang") }
-    val best = cs.reduce(greatest(_, _))
-    val worst = cs.reduce(least(_, _))
-    // sum − best − worst is the true runner-up ONLY for exactly 3
-    // languages; a 4th markerSet would silently corrupt margin and
-    // ambiguous (and the oracle's identical identity). Fail loudly
-    // instead (ADVICE r7): a larger language set must switch to a
-    // sort over the count columns.
-    require(markerSets.size == 3,
-      s"x79's second-best identity (sum-best-worst) requires exactly 3 " +
-        s"languages; markerSets has ${markerSets.size} — recompute `second` " +
-        "via a sort over the count columns before adding languages")
-    val second = cs.reduce(_ + _) - best - worst
-    Tables.documents(s, d)
-      .select(col("doc_id") +: size(wsTokens(col("text"))).cast("long")
-        .as("n") +: counts: _*)
-      .select(col("doc_id"),
-        markerSets.foldRight(lit("und"): Column) { case ((lang, _), acc) =>
-          when(col(s"c_$lang") === best && col(s"c_$lang") > 0, lit(lang))
-            .otherwise(acc)
-        }.as("lang_detectada"),
-        (intRoundHalfAway((best - second) * 10000L,
-          greatest(col("n"), lit(1L))).cast("double") / 1e4).as("margin"),
-        (best === second || best === 0L).as("ambiguous"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** X80: per-source quality trend — the OLS slope of quality over
-    * ingestion order, per source: the monitoring number that says a
-    * feed is DEGRADING (template drift, spam creep) before its mean
-    * quality visibly moves. Quality quantizes to integer 1e-4 units
-    * and the slope comes from exact integer moments
-    * (nΣxy − ΣxΣy)/(nΣx² − (Σx)²) — the m2 recipe: order-free sums,
-    * one BIGINT-rounded ratio, no engine-specific streaming regr_*
-    * accumulation. One scan onto |sources| rows, map-side
-    * combinable. doc_id is the ingestion-order proxy here; at
-    * production id widths the x-moments would use the within-source
-    * ordinal (or decimal(38,0) sums) to keep Σx² exact. */
-  val x80QualityTrend: Q = (s, d) =>
-    Tables.documents(s, d)
-      .select(col("source"), col("doc_id").as("x"),
-        round(qualityScore(col("text"), stopwords) * 1e4, 0)
-          .cast("long").as("q4"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("x")).as("sx"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("q4")).as("sy"),
-        sum(col("x") * col("q4")).as("sxy"))
-      .withColumn("num", col("n_docs") * col("sxy") - col("sx") * col("sy"))
-      .withColumn("den", col("n_docs") * col("sxx") - col("sx") * col("sx"))
-      .select(col("source"), col("n_docs"),
-        (intRoundHalfAway(col("sy") * 100L, col("n_docs"))
-          .cast("double") / 1e6).as("mean_quality"),
-        (intRoundHalfAway(col("num") * 100L, col("den"))
-          .cast("double") / 1e3).as("trend_per_1k"),
-        (intRoundHalfAway(col("num") * 100L, col("den")) < -10L)
-          .as("degrading"))
-      .orderBy(col("source"))
-
-  /** X81: per-source corpus data card — the one-table datasheet
-    * shipped with a corpus drop (Gebru et al.'s "Datasheets for
-    * Datasets" reduced to the numbers a training run consumes):
-    * volume (docs / tokens / bytes), mean quality, within-source
-    * exact-dup rate, language-mix Shannon entropy (bits), and an
-    * ORDER-FREE content checksum (Σ md5₃₂ of the doc fingerprints —
-    * reproducible across reruns, partitionings, and engines, so two
-    * pipelines can assert they read the same corpus without sorting
-    * it). Composes only established recipes: integer BIGINT ratios,
-    * the x55 quantized-log entropy, the x1 fingerprint. Shape: one
-    * corpus scan onto |sources| rows plus the |sources|×|langs| grid
-    * — everything map-side combinable. */
-  val x81CorpusCard: Q = (s, d) => {
-    val ln2 = 0.6931471805599453
-    val docs = Tables.documents(s, d)
-    val base = docs.groupBy(col("source")).agg(
-      count(lit(1)).as("n_docs"),
-      sum(tokenCount(col("text")).cast("long")).as("n_tok"),
-      sum(octet_length(col("text")).cast("long")).as("n_bytes"),
-      sum(round(qualityScore(col("text"), stopwords) * 1e4, 0).cast("long"))
-        .as("sq4"),
-      countDistinct(fingerprint(col("text"))).as("n_unique"),
-      sum(graft.dedup.NearDup.md5Hash32(fingerprint(col("text"))))
-        .as("content_checksum"))
-    val langH = docs.groupBy(col("source"), col("lang"))
-      .agg(count(lit(1)).as("c"))
-      .withColumn("n", sum(col("c")).over(Window.partitionBy(col("source"))))
-      .withColumn("t", col("c") *
-        round(log(col("c").cast("double") / col("n").cast("double")) * 1e6, 0)
-          .cast("long"))
-      .groupBy(col("source")).agg(sum(col("t")).as("sH"), max(col("n")).as("n"))
-      .select(col("source"),
-        (intRoundHalfAway(-col("sH"), col("n")).cast("double") / 1e6
-          / lit(ln2)).as("lang_entropy_bits"))
-    base.join(langH, Seq("source"))
-      .select(col("source"), col("n_docs"), col("n_tok"), col("n_bytes"),
-        (intRoundHalfAway(col("sq4") * 100L, col("n_docs"))
-          .cast("double") / 1e6).as("mean_quality"),
-        (intRoundHalfAway((col("n_docs") - col("n_unique")) * 10000L,
-          col("n_docs")).cast("double") / 1e4).as("dup_rate"),
-        col("lang_entropy_bits"), col("content_checksum"))
-      .orderBy(col("source"))
-  }
-
-  /** X82: per-source quality percentile — quality normalized to its
-    * source's own distribution (percent_rank within source): the
-    * standard fix before a GLOBAL quality threshold, because sources
-    * score on different scales (a boilerplate-heavy portal's best doc
-    * can score below a clean source's median — x32's per-source
-    * cutoff solved this with per-source thresholds; the percentile
-    * makes docs comparable ACROSS sources so one global knob works).
-    * Determinism: percent_rank = (rank−1)/(n−1) where rank counts
-    * ties identically in both engines (SQL semantics) and the one
-    * division has identical integer operands — no rounding step
-    * exists at all. Shape: one scan, one source-partitioned window
-    * (each partition is a source's docs — the x25 sub-shard pattern
-    * applies if a single source outgrows a task at 100 TB). */
-  val x82QualityPercentile: Q = (s, d) =>
-    Tables.documents(s, d)
-      .select(col("doc_id"), col("source"),
-        qualityScore(col("text"), stopwords).as("quality"))
-      .withColumn("pct_rank", percent_rank().over(
-        Window.partitionBy(col("source")).orderBy(col("quality"))))
-      .withColumn("keep_global_p25", col("pct_rank") >= 0.25)
-      .orderBy(col("doc_id"))
-
-  /** Shared BPE trainer for x106/x107: ONE corpus scan builds the
-    * frequency-weighted word vocabulary (map-side-combinable
-    * `(word, count)` aggregation, top-1024 by (freq DESC, word ASC) —
-    * dimension-bounded by construction), then [[graft.text.Bpe]]'s
-    * driver-side integer merge loop learns up to 50 merges. The
-    * driver loop is the m1-knotScan pattern: per-iteration Spark jobs
-    * over a ≤1024-row relation would be pure scheduling overhead, and
-    * every quantity is an exact BIGINT count with a byte-order
-    * tie-break, so the replica is provably ≡ the oracle's unrolled
-    * per-iteration SQL. */
-  /** The frequency-weighted top-V training vocabulary of a corpus
-    * slice — ONE scan, map-side-combinable, dimension-bounded by the
-    * cap (the collect is ≤ topV rows by construction). */
-  /** The (w, f) word-frequency table of a docs frame — the one corpus
-    * scan every tokenizer trainer starts from. */
-  private[graft] def wordFreq(docs: DataFrame): DataFrame =
-    docs
-      .select(explode(wsTokens(lower(col("text")))).as("w"))
-      .filter(col("w") =!= "")
-      .groupBy(col("w")).agg(count(lit(1)).as("f"))
-
-  private[graft] def bpeVocabOf(wf: DataFrame, topV: Int): Seq[(String, Long)] =
-    wf.orderBy(col("f").desc, col("w")).limit(topV)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-
-  private[graft] def bpeVocab(docs: DataFrame, topV: Int): Seq[(String, Long)] =
-    bpeVocabOf(wordFreq(docs), topV)
-
-  private[graft] def trainBpeMerges(s: SparkSession, d: String): Seq[graft.text.Bpe.Merge] =
-    graft.text.Bpe.trainOnVocab(bpeVocab(Tables.documents(s, d), 1024), 50)
-
-  /** X106: BPE merge-table training (Sennrich et al. 2016) — the
-    * vocabulary-LEARNING operator the fixed-vocab measurements
-    * (x9/x44/x54) audit against: 50 merges by iterated most-frequent-
-    * adjacent-pair counting over the frequency-weighted top-1024 word
-    * vocabulary, deterministic (count DESC, lhs ASC, rhs ASC)
-    * tie-break, greedy left-to-right application between iterations.
-    * Output is the learned merge table itself (≤50 rows — step, lhs,
-    * rhs, merged symbol, frequency-weighted pair count; early-
-    * exhausted training emits fewer rows). Scale shape: the corpus is
-    * touched ONCE (the word-frequency aggregation); every iteration
-    * runs on the V-row vocab — BPE's cost is by design independent of
-    * corpus size past the first scan. The oracle replays all 50
-    * iterations as unrolled SQL. */
-  val x106BpeTrain: Q = (s, d) => {
-    val merges = trainBpeMerges(s, d)
-    s.createDataFrame(merges.map(m =>
-        (m.step.toLong, m.lhs, m.rhs, m.lhs + m.rhs, m.pairFreq)))
-      .toDF("step", "lhs", "rhs", "merged", "pair_freq")
-      .orderBy(col("step"))
-  }
-
-  /** X145: WordPiece merge-table training (Schuster & Nakajima 2012,
-    * "Japanese and Korean voice search"; the BERT tokenizer's
-    * trainer) — x106's BPE loop under the published LIKELIHOOD
-    * selection rule: merge the adjacent pair maximizing
-    * count(ab) / (count(a)·count(b)) — the pair whose fusion most
-    * increases unigram-LM corpus likelihood — instead of raw pair
-    * frequency. Ranking is the exact integer floor-quotient
-    * cnt·10¹² / (ca·cb) (ties: cnt DESC, lhs, rhs in byte order), so
-    * both engines replay the same argmax with no float anywhere in
-    * the loop; unit counts are frequency-weighted symbol occurrences
-    * in the CURRENT segmentation state, recomputed per iteration.
-    * Scale shape ≡ x106: ONE corpus scan builds the top-1024 word
-    * vocabulary, then all 50 iterations are driver-side integer
-    * arithmetic on that dimension-bounded relation — cost independent
-    * of corpus size past the scan. Output adds the unit counts and
-    * score — the audit columns that distinguish a likelihood merge
-    * from a frequency merge (see the EngineSpec crafted-vocab pin
-    * where the two rules provably diverge). Oracle: all 50 iterations
-    * unrolled (pair counts + unit counts + HUGEINT quotient argmax +
-    * run-parity greedy apply). */
-  val x145WordpieceTrain: Q = (s, d) => {
-    val merges = graft.text.Bpe.trainWordPieceOnVocab(
-      bpeVocab(Tables.documents(s, d), 1024), 50)
-    s.createDataFrame(merges.map(m =>
-        (m.step.toLong, m.lhs, m.rhs, m.lhs + m.rhs, m.pairFreq,
-         m.lhsFreq, m.rhsFreq, m.scoreQ.toDouble / 1e12)))
-      .toDF("step", "lhs", "rhs", "merged", "pair_freq", "lhs_freq",
-        "rhs_freq", "score")
-      .orderBy(col("step"))
-  }
-
-  /** X107: BPE segmentation + learned-vocab fertility — x54's
-    * tokenizer-fertility audit re-derived on the vocabulary x106
-    * LEARNS instead of the fixed regex proxy. Segmentation is a
-    * DICTIONARY computation ([[graft.text.Bpe.segmentDict]]): the 50
-    * merges replay once per DISTINCT word as row-local Column
-    * expressions (closed-form greedy via run parity — no UDF, no
-    * shuffle), and the dictionary broadcast-joins back to the
-    * per-(source, word) count table; document text never moves after
-    * the one counting scan. Per source: word occurrences, subword
-    * tokens, single-token (fully merged) occurrences, and fertility =
-    * subtokens/words on the pure-BIGINT [[intRoundHalfAway]]. At
-    * 100 TB the dictionary is the working set (≪ corpus, the classic
-    * tokenizer-training layout) and the join stays broadcast-sized
-    * per the same cap as training. */
-  val x107BpeSegment: Q = (s, d) => {
-    val merges = trainBpeMerges(s, d).map(m => (m.lhs, m.rhs))
-    val sw = Tables.documents(s, d)
-      .select(col("source"), explode(wsTokens(lower(col("text")))).as("w"))
-      .filter(col("w") =!= "")
-      .groupBy(col("source"), col("w")).agg(count(lit(1)).as("f"))
-    val dict = graft.text.Bpe.segmentDict(sw.select(col("w")).distinct(), merges)
-      .select(col("w"), size(col("syms")).cast("long").as("n_sub"))
-    sw.join(broadcast(dict), Seq("w"))
-      .groupBy(col("source"))
-      .agg(sum(col("f")).as("n_words"),
-        sum(col("f") * col("n_sub")).as("n_subtok"),
-        sum(when(col("n_sub") === 1, col("f")).otherwise(0L)).as("n_single"))
-      .select(col("source"), col("n_words"), col("n_subtok"), col("n_single"),
-        (intRoundHalfAway(col("n_subtok") * 10000L, col("n_words"))
-          .cast("double") / 1e4).as("fertility"))
-      .orderBy(col("source"))
-  }
-
-  /** x127's scored table: every held-out (x36 val-split) token at a
-    * full-trigram position, with its probability under each mixture
-    * component trained on the TRAIN split — uniform 1/(V+1), unigram
-    * MLE c(w)/N, bigram MLE c(vw)/Σc(v·), trigram MLE c(uvw)/Σc(uv·)
-    * (unseen grams/contexts score 0; the uniform floor keeps every
-    * token's mixture positive). Gram tables are the x64 join graph;
-    * each probability is ONE double division in an order the oracle
-    * mirrors exactly. Built once and checkpointed — the EM loop
-    * re-scans these four doubles, never the corpus. */
-  private[graft] def emInterpScored(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    val balde = pmod(
-      conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long"), lit(100L))
-    val train = docs.filter(balde < 90)
-    val ho = docs.filter(balde >= 90 && balde < 95)
-    val ttk = train.select(wsTokens(col("text")).as("toks"))
-      .withColumn("n", size(col("toks")))
-    val uni = ttk.select(explode(col("toks")).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("c1"))
-    val scal = uni.agg(sum(col("c1")).as("nn"), count(lit(1)).as("vv"))
-    val bi = ttk.filter(col("n") >= 2)
-      .select(col("toks"), explode(sequence(lit(2), col("n"))).as("i"))
-      .select(element_at(col("toks"), col("i") - 1).as("v"),
-        element_at(col("toks"), col("i")).as("w"))
-      .groupBy(col("v"), col("w")).agg(count(lit(1)).as("c2"))
-    val ctx2 = bi.groupBy(col("v")).agg(sum(col("c2")).as("k2"))
-    val tri = ttk.filter(col("n") >= 3)
-      .select(col("toks"), explode(sequence(lit(3), col("n"))).as("i"))
-      .select(element_at(col("toks"), col("i") - 2).as("u"),
-        element_at(col("toks"), col("i") - 1).as("v"),
-        element_at(col("toks"), col("i")).as("w"))
-      .groupBy(col("u"), col("v"), col("w")).agg(count(lit(1)).as("c3"))
-    val ctx3 = tri.groupBy(col("u"), col("v")).agg(sum(col("c3")).as("k3"))
-    ho.select(wsTokens(col("text")).as("toks"))
-      .withColumn("n", size(col("toks")))
-      .filter(col("n") >= 3)
-      .select(col("toks"), explode(sequence(lit(3), col("n"))).as("i"))
-      .select(element_at(col("toks"), col("i") - 2).as("u"),
-        element_at(col("toks"), col("i") - 1).as("v"),
-        element_at(col("toks"), col("i")).as("w"))
-      .join(uni, Seq("w"), "left")
-      .join(bi, Seq("v", "w"), "left")
-      .join(ctx2, Seq("v"), "left")
-      .join(tri, Seq("u", "v", "w"), "left")
-      .join(ctx3, Seq("u", "v"), "left")
-      .crossJoin(broadcast(scal))
-      .select(
-        (lit(1.0) / (col("vv").cast("double") + 1.0)).as("p0"),
-        (coalesce(col("c1"), lit(0L)).cast("double")
-          / col("nn").cast("double")).as("p1"),
-        when(col("k2").isNull, lit(0.0))
-          .otherwise(coalesce(col("c2"), lit(0L)).cast("double")
-            / col("k2").cast("double")).as("p2"),
-        when(col("k3").isNull, lit(0.0))
-          .otherwise(coalesce(col("c3"), lit(0L)).cast("double")
-            / col("k3").cast("double")).as("p3"))
-      .localCheckpoint()
-  }
-
-  /** x127's trainer: 5 full-batch EM steps for the interpolation
-    * weights λ of the 4-component mixture, from uniform init — the
-    * Jelinek-Mercer deleted-interpolation recipe (Jelinek & Mercer
-    * 1980; Chen & Goodman's JM baseline), the standard way the λs of
-    * an interpolated LM are actually set. Per step: posterior
-    * responsibilities r_o = λ_o·p_o / Σ λ·p, quantized 1e-6 AFTER
-    * evaluation (the x39/x108 transcendental-free contract — here
-    * even the division is the only double op), summed as order-free
-    * BIGINTs; λ' = Σr_o/(T·1e6) is one double division on those
-    * integers, so driver and the oracle's 5 unrolled SQL iterations
-    * agree bit-for-bit. EM's likelihood-monotonicity is pinned in
-    * EngineSpec off this exact replica. */
-  private[graft] def emInterpLambdas(scored: DataFrame,
-      iters: Int = 5): (Seq[Double], Long) = {
-    val t = scored.count()
-    // ONE job per EM step (r12, guide §2.4 — the trainQualityClfSteps
-    // shape): the four responsibility sums are order-free BIGINT
-    // sums, so each step is a single RDD aggregate whose task results
-    // return 4 longs to the driver — no exchange, no per-step AQE
-    // stage job. Per-row math replicates the former SQL aggregation
-    // exactly ([[rndQ]] = Spark's round(x,0).cast(long); the
-    // λ·p/den·1e6 chain is evaluated in the same operand order).
-    val rdd = scored.select(col("p0"), col("p1"), col("p2"), col("p3"))
-      .queryExecution.toRdd
-      .map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2),
-        r.getDouble(3)))
-    var l = Seq(0.25, 0.25, 0.25, 0.25)
-    for (_ <- 1 to iters) {
-      val l0 = l(0); val l1 = l(1); val l2 = l(2); val l3 = l(3)
-      val q = rdd.aggregate(new Array[Long](4))((acc, p) => {
-        val (p0, p1, p2, p3) = p
-        val den = l0 * p0 + l1 * p1 + l2 * p2 + l3 * p3
-        acc(0) += rndQ(l0 * p0 / den * 1e6)
-        acc(1) += rndQ(l1 * p1 / den * 1e6)
-        acc(2) += rndQ(l2 * p2 / den * 1e6)
-        acc(3) += rndQ(l3 * p3 / den * 1e6)
-        acc
-      }, (a, b) => {
-        var i = 0
-        while (i < 4) { a(i) += b(i); i += 1 }
-        a
-      })
-      l = (0 to 3).map(o => q(o).toDouble / (t.toDouble * 1e6))
-    }
-    (l, t)
-  }
-
-  /** X127: EM-tuned LM interpolation weights — the last fixed
-    * hyperparameter in the LM family (x39/x40/x64/x83) actually
-    * LEARNED from data: deleted interpolation fits λ over
-    * {uniform, unigram, bigram, trigram} MLE components on the x36
-    * val split, the exact procedure production KenLM/SRILM pipelines
-    * run (`ngram -count -interpolate` tunes these same weights on
-    * held-out text). Output: one row per component with its tuned
-    * weight — the model card for the mixture the perplexity filters
-    * should score with. Scale shape: gram tables are the x64
-    * shuffles; the scored table (4 doubles per held-out trigram
-    * position) is built once and checkpointed; each EM step is ONE
-    * map-side-combinable 4-sum aggregation over it (5 scheduling
-    * round-trips total — the x108 driver-loop floor, data-volume
-    * free). */
-  val x127EmInterpolation: Q = (s, d) => {
-    val (l, _) = emInterpLambdas(emInterpScored(s, d))
-    s.createDataFrame(Seq(
-        ("uniform", l(0)), ("unigram", l(1)),
-        ("bigram", l(2)), ("trigram", l(3))))
-      .toDF("component", "lraw")
-      .select(col("component"), round(col("lraw"), 6).as("lambda"))
-      .orderBy(col("component"))
-  }
-
-  /** x117's piece inventory: every 1-4-char substring of every
-    * distinct (≤ [[ViterbiMaxW]]-char) corpus word, scored by its
-    * frequency-weighted occurrence count — sq = round(ln(cnt/total)
-    * ·1e4) as BIGINT (one transcendental per PIECE, quantized after
-    * evaluation — the x39 rule — so the DP downstream is pure integer
-    * max-plus and engine-exact). The inventory is vocabulary-sized
-    * (≤ |vocab|·(4·maxlen) rows), never corpus-sized: the corpus is
-    * touched once for the word counts. */
-  private[graft] def unigramPieceScores(docs: DataFrame): DataFrame =
-    unigramPieceScoresOf(wordFreq(docs)
-      .filter(length(col("w")) <= ViterbiMaxW))
-
-  /** [[unigramPieceScores]] from a prebuilt (w ≤ ViterbiMaxW chars, f)
-    * word-frequency table — lets x167 share ONE train-split scan
-    * between the BPE/WordPiece vocab and the unigram inventory. */
-  private[graft] def unigramPieceScoresOf(wf: DataFrame): DataFrame = {
-    val cand = wf.select(col("f"),
-        explode(flatten(transform(sequence(lit(0), length(col("w")) - 1),
-          j => transform(sequence(lit(1),
-              least(lit(4), length(col("w")) - j)),
-            l => col("w").substr(j + 1, l))))).as("p"))
-    val pc = cand.groupBy(col("p")).agg(sum(col("f")).as("cnt"))
-    val tot = pc.agg(sum(col("cnt")).as("t"))
-    pc.crossJoin(broadcast(tot))
-      .select(col("p"),
-        round(log(col("cnt").cast("double") / col("t").cast("double"))
-          * 1e4, 0).cast("long").as("sq"))
-  }
-
-  /** DP unroll cap for [[viterbiDict]]: words longer than this are
-    * excluded from the dictionary by contract on BOTH engines (the
-    * fixture corpus caps at 8 chars; production raises the unroll). */
-  private[graft] val ViterbiMaxW = 16
-
-  /** x117's segmentation dictionary: per distinct word, the OPTIMAL
-    * (max total log-probability) segmentation into 1-4-char pieces
-    * under [[unigramPieceScores]] — SentencePiece's unigram-LM
-    * Viterbi decode, the exact counterpart to x107's greedy BPE merge
-    * replay. The DP is a fixed [[ViterbiMaxW]]-level unroll of
-    * best(i) = max_j best(j) + sc(w[j+1..i]) over row-local Column
-    * expressions (no UDF, no iteration): each word carries a 64-slot
-    * score array (k = start·4 + len via one piece-keyed join), and
-    * the tie-break (score DESC, pieces ASC) rides a SECOND max-plus
-    * DP over enc = 32·score − pieces — integer dominance (any score
-    * gap ≥ 1 outweighs the ≤ ViterbiMaxW piece gap), so no struct
-    * comparison and no division ever enters the recurrence; the piece
-    * count decodes as np = 32·s_L − e_L. Like x107 this is a
-    * DICTIONARY computation: the merges replay once per distinct
-    * word, never per occurrence. */
-  private[graft] def viterbiDict(docs: DataFrame): DataFrame =
-    viterbiDictOn(unigramPieceScores(docs), docs
-      .select(explode(wsTokens(lower(col("text")))).as("w"))
-      .filter(col("w") =!= "" && length(col("w")) <= ViterbiMaxW)
-      .distinct())
-
-  /** [[viterbiDict]] decoupled: decode `words` (a distinct single-
-    * column `w` relation, each ≤ [[ViterbiMaxW]] chars) under an
-    * ARBITRARY piece-score table — the split x167 needs (scores from
-    * the train slice, words from held-out). A word with a position no
-    * scored piece covers decodes to NULL wq/np (max-plus over an
-    * empty candidate set), and a word with NO scored piece at all
-    * drops from the output entirely (inner piece join) — both are the
-    * closed-inventory OOV signal x167 reports. */
-  private[graft] def viterbiDictOn(scores: DataFrame,
-      words: DataFrame): DataFrame = {
-    val cand = words.select(col("w"),
-        explode(flatten(transform(sequence(lit(0), length(col("w")) - 1),
-          j => transform(sequence(lit(1),
-              least(lit(4), length(col("w")) - j)),
-            l => struct((j * 4 + l).cast("int").as("k"),
-              col("w").substr(j + 1, l).as("p")))))).as("c"))
-      .select(col("w"), col("c.k").as("k"), col("c.p").as("p"))
-    // Both max-plus DPs ride ONE aggregate fold over the level index
-    // (r12): the former shape unrolled 2·ViterbiMaxW projections whose
-    // Catalyst analysis dominated the query at bench scale; the fold's
-    // tree is constant-size and the recursion lives in the runtime
-    // accumulator array (f_i sits at slot i+1; slot 1 is the f_0 = 0
-    // base). Candidate l > i contributes a NULL that greatest skips —
-    // exactly the former static 1..min(4,i) candidate list; NULL
-    // propagation from unscored pieces is unchanged.
-    val n = length(col("w"))
-    // The zero MUST declare its struct fields nullable (slice of an
-    // array that also holds a null struct): ArrayAggregate's result
-    // type is the zero's type, and the fold stores genuine NULLs
-    // (unscored pieces) — a non-nullable zero would make every
-    // downstream codegen'd reader treat the null slots as 0.
-    val zeroSE = slice(array(
-      struct(lit(0L).as("s"), lit(0L).as("e")),
-      struct(lit(null).cast("long").as("s"),
-        lit(null).cast("long").as("e"))), 1, 1)
-    val faE = aggregate(
-      sequence(lit(1), lit(ViterbiMaxW)),
-      zeroSE,
-      (acc, i) => {
-        def sc(l: Int) = element_at(col("scl"), (i - lit(l)) * 4 + lit(l))
-        def prev(l: Int) = element_at(acc, i - lit(l) + 1)
-        concat(acc, array(struct(
-          greatest((1 to 4).map(l => when(lit(l) <= i,
-            prev(l).getField("s") + sc(l))): _*).as("s"),
-          greatest((1 to 4).map(l => when(lit(l) <= i,
-            prev(l).getField("e") + sc(l) * 32L - 1L)): _*).as("e"))))
-      })
-    cand.join(scores, Seq("p"))
-      .groupBy(col("w"))
-      .agg(map_from_entries(collect_list(struct(col("k"), col("sq"))))
-        .as("pm"))
-      .withColumn("scl", transform(sequence(lit(1), lit(64)),
-        k => element_at(col("pm"), k)))
-      .select(col("w"), col("scl"))
-      .withColumn("fa", faE)
-      .select(col("w"),
-        element_at(col("fa"), (n + 1).cast("int")).getField("s").as("wq"),
-        element_at(col("fa"), (n + 1).cast("int")).getField("e").as("ef"))
-      .select(col("w"), (lit(32L) * col("wq") - col("ef")).as("np"),
-        col("wq"))
-  }
-
-  /** X117: unigram-LM Viterbi segmentation — the OTHER standard
-    * subword tokenizer beside x106/x107's BPE (SentencePiece's
-    * unigram model, Kudo 2018): pieces scored by corpus substring
-    * statistics, each word decoded to its maximum-likelihood
-    * segmentation by dynamic programming — provably optimal where
-    * BPE's greedy merge replay is merely conventional (EngineSpec
-    * pins a crafted word where the Viterbi split strictly beats
-    * greedy longest-match). Per source: word occurrences, total
-    * pieces, fertility, and the mean per-word negative log-likelihood
-    * under the piece LM (the tokenizer-quality number a vocab budget
-    * is priced on). Scale shape: ONE corpus scan for word counts, a
-    * vocabulary-sized piece inventory and dictionary ([[viterbiDict]]
-    * — the DP replays once per DISTINCT word), and a vocab-keyed
-    * dictionary join back to the (source, word) counts — the classic
-    * tokenizer layout; nothing downstream of the first scan is
-    * corpus-sized. All ratios pure-BIGINT [[intRoundHalfAway]]. */
-  val x117UnigramViterbi: Q = (s, d) => {
-    val docs = Tables.documents(s, d)
-    val sw = docs
-      .select(col("source"), explode(wsTokens(lower(col("text")))).as("w"))
-      .filter(col("w") =!= "" && length(col("w")) <= ViterbiMaxW)
-      .groupBy(col("source"), col("w")).agg(count(lit(1)).as("f"))
-    sw.join(viterbiDict(docs), Seq("w"))
-      .groupBy(col("source"))
-      .agg(sum(col("f")).as("n_words"),
-        sum(col("f") * col("np")).as("n_pieces"),
-        sum(col("f") * -col("wq")).as("snll"))
-      .select(col("source"), col("n_words"), col("n_pieces"),
-        (intRoundHalfAway(col("n_pieces") * 10000L, col("n_words"))
-          .cast("double") / 1e4).as("fertility"),
-        (intRoundHalfAway(col("snll"), col("n_words"))
-          .cast("double") / 1e4).as("mean_word_nll"))
-      .orderBy(col("source"))
-  }
-
-  /** Floor score for a piece ABSENT from the current inventory: any
-    * path through a missing piece loses to any all-present path
-    * (real quantized log-scores are ≥ −10⁷; the floor is −2⁴⁰), but
-    * 16 floor pieces still sum far from Long overflow — so the DP
-    * stays total-function on both engines (NULL-free: DuckDB GREATEST
-    * returns NULL if ANY argument is NULL, Spark's skips them — the
-    * coalesced floor removes the divergence). */
-  private[graft] val NegSq = -(1L << 40)
-
-  /** Viterbi decode of each distinct word under an ARBITRARY piece
-    * inventory `scores` (p, sq) — the x117 DP generalized twice for
-    * the EM trainer (x135): (a) pieces may be MISSING (left join +
-    * [[NegSq]] floor), so the same machinery decodes under a pruned
-    * vocabulary; (b) the chosen pieces are RECOVERED, not just
-    * counted — a SUFFIX max-plus DP (f_t = best enc-score of the
-    * last t chars; enc = 32·score − pieces, x117's integer-dominance
-    * tie-break) followed by a leftmost-smallest-piece unrolled walk:
-    * at each position take the SMALLEST l whose piece score + best
-    * suffix equals the current best — deterministic on both engines
-    * with no path-uniqueness assumption, because the walk re-applies
-    * one fixed rule to the same integer DP table. Returns (w, pieces,
-    * np, wq) with wq the plain summed log-score in 1e-4 units
-    * (recovered exactly as (enc + np)/32 — no second DP). Dictionary
-    * computation: O(|vocab|·16·4) row-local work after one
-    * piece-keyed join; nothing corpus-sized. */
-  /** Column-expression let (the graft.text.Bpe trick): binds `v` once
-    * through a single-element array + transform so `f`'s references
-    * read the bound value instead of re-evaluating the expression. */
-  private def letCol(v: Column, f: Column => Column): Column =
-    element_at(transform(array(v), f), 1)
-
-  private[graft] def unigramDecode(words: DataFrame, scores: DataFrame): DataFrame = {
-    val n = length(col("w"))
-    val cand = words.select(col("w"),
-        explode(flatten(transform(sequence(lit(0), n - 1),
-          j => transform(sequence(lit(1), least(lit(4), n - j)),
-            l => struct((j * 4 + l).cast("int").as("k"),
-              col("w").substr(j + 1, l).as("p")))))).as("c"))
-      .select(col("w"), col("c.k").as("k"), col("c.p").as("p"))
-    // Suffix DP and decode walk each ride ONE aggregate fold (r12):
-    // the former shape unrolled ViterbiMaxW DP projections plus
-    // 3·ViterbiMaxW walk projections, whose Catalyst analysis
-    // dominated every decode at bench scale (x135 runs three). The
-    // fold trees are constant-size; per-row arithmetic, NULL
-    // behaviour, and the leftmost-smallest-piece walk rule are
-    // unchanged, so the recovered pieces are identical. f_t sits at
-    // accumulator slot t+1 (slot 1 = the f_0 = 0 base); a candidate
-    // l > t contributes a NULL that greatest skips — the former
-    // static 1..min(4,t) list.
-    val faE = aggregate(
-      sequence(lit(1), lit(ViterbiMaxW)),
-      array(lit(0L)),
-      (acc, t) => concat(acc, array(
-        when(t <= n, greatest((1 to 4).map(l => when(lit(l) <= t,
-          lit(32L) * element_at(col("scl"), (n - t) * 4 + lit(l)) - 1L +
-            element_at(acc, t - lit(l) + 1))): _*))
-          .otherwise(lit(NegSq * 32L)))))
-    // walk accumulator: (r = chars left, ps = pieces so far); the
-    // chosen length is let-bound so the update and the substring read
-    // the same evaluation — the former per-step l/p/r projections.
-    val walkE = aggregate(
-      sequence(lit(1), lit(ViterbiMaxW)),
-      struct(n.cast("long").as("r"),
-        array().cast("array<string>").as("ps")),
-      (acc, _) => {
-        val r = acc.getField("r")
-        def ok(l: Int) = {
-          val sc = lit(32L) * element_at(col("scl"),
-            ((n.cast("long") - r) * 4L + l).cast("int")) - 1L
-          (lit(l.toLong) <= r) &&
-            (sc + element_at(col("fa"),
-              (greatest(r - l, lit(0L)) + 1L).cast("int")) ===
-              element_at(col("fa"), (r + 1).cast("int")))
-        }
-        val lu = when(ok(1), 1L).when(ok(2), 2L).when(ok(3), 3L)
-          .otherwise(4L)
-        letCol(when(r > 0, lu), lc => struct(
-          (r - coalesce(lc, lit(0L))).as("r"),
-          when(lc.isNotNull, concat(acc.getField("ps"),
-            array(col("w").substr((n.cast("long") - r + 1).cast("int"),
-              lc.cast("int")))))
-            .otherwise(acc.getField("ps")).as("ps")))
-      })
-    cand.join(scores, Seq("p"), "left")
-      .groupBy(col("w"))
-      .agg(map_from_entries(collect_list(
-        when(col("sq").isNotNull, struct(col("k"), col("sq"))))).as("pm"))
-      .withColumn("scl", transform(sequence(lit(1), lit(64)),
-        k => coalesce(element_at(col("pm"), k), lit(NegSq))))
-      .select(col("w"), col("scl"))
-      .withColumn("fa", faE)
-      .withColumn("wk", walkE)
-      .select(col("w"), col("wk").getField("ps").as("pieces"),
-        element_at(col("fa"), (n + 1).cast("int")).as("ef"))
-      .select(col("w"), col("pieces"),
-        size(col("pieces")).cast("long").as("np"),
-        call_function("div",
-          col("ef") + size(col("pieces")).cast("long"), lit(32L)).as("wq"))
-  }
-
-  /** The Viterbi-EM loop for the x135 unigram tokenizer (Kudo 2018's
-    * trainer under the hard-EM / Viterbi-count approximation): per
-    * step, E = decode every distinct word under the current piece
-    * scores and count piece usage weighted by word frequency, M =
-    * re-normalize (sq' = round(ln(cnt/Σcnt)·1e4) — one transcendental
-    * per PIECE, quantized after evaluation, the x39 rule). Unused
-    * pieces drop out of the inventory; every word stays decodable
-    * because its own previous segmentation survives by construction.
-    * Step 0 scores are x117's substring-frequency heuristic, so x135
-    * is literally "x117's model, EM-improved". Returns the final
-    * usage counts plus J(θ_t) = Σ_w f·wq(θ_t) per step — Viterbi-EM's
-    * ascent objective, pinned monotone (to quantization slack) in
-    * EngineSpec. Scale: ONE corpus scan (word counts); each step is
-    * vocabulary-sized decode + piece-keyed aggregation; the
-    * per-step localCheckpoint is the honest iteration boundary (the
-    * x108 lesson: fusing data-dependent iterations explodes the
-    * Catalyst tree). */
-  private[graft] def emUnigramCounts(s: SparkSession, d: String,
-      steps: Int, withJ: Boolean = true): (DataFrame, DataFrame, Seq[Long]) = {
-    val docs = Tables.documents(s, d)
-    // one corpus scan: the checkpointed (w ≤ ViterbiMaxW, f) table
-    // feeds every EM step AND x135's downstream dictionary/char
-    // passes (returned alongside counts, r12 — x135 formerly
-    // re-scanned the corpus for the distinct-word list), and the
-    // step-0 heuristic scores derive from the same table instead of a
-    // second scan.
-    val words = wordFreq(docs)
-      .filter(length(col("w")) <= ViterbiMaxW)
-      .localCheckpoint()
-    var scores = unigramPieceScoresOf(words).localCheckpoint()
-    var counts: DataFrame = null
-    val js = scala.collection.mutable.ArrayBuffer[Long]()
-    for (_ <- 1 to steps) {
-      val dec = unigramDecode(words.select(col("w")), scores)
-        .join(words, Seq("w"))
-        .localCheckpoint()
-      // J(θ) is a returned diagnostic (the EngineSpec ascent pin);
-      // production callers that ignore it skip its per-step job
-      // (guide §1.2 — don't compute what you throw away)
-      if (withJ)
-        js += dec.agg(sum(col("f") * col("wq"))).collect()(0).getLong(0)
-      counts = dec.select(col("f"), explode(col("pieces")).as("p"))
-        .groupBy(col("p")).agg(sum(col("f")).as("cnt"))
-        .localCheckpoint()
-      val tot = counts.agg(sum(col("cnt")).as("t"))
-      scores = counts.crossJoin(broadcast(tot))
-        .select(col("p"),
-          round(log(col("cnt").cast("double") / col("t").cast("double"))
-            * 1e4, 0).cast("long").as("sq"))
-        .localCheckpoint()
-    }
-    (words, counts, js.toSeq)
-  }
-
-  /** X135: EM-trained unigram tokenizer (Kudo 2018 — SentencePiece's
-    * trainer, closing the round-9 verdict's top item): x117 decodes
-    * optimally but scores pieces by raw substring frequency; this
-    * carrier LEARNS the piece probabilities by 2 Viterbi-EM steps
-    * ([[emUnigramCounts]]), PRUNES to a vocab budget (all single
-    * characters add-one-smoothed — the coverage floor Kudo keeps
-    * unconditionally — plus the top-16 multi-char pieces by usage,
-    * ties on piece text), and re-decodes the dictionary under the
-    * pruned, re-normalized inventory ([[unigramDecode]]'s missing-
-    * piece floor makes the pruned decode total). Output per source:
-    * word/piece mass, fertility, and mean per-word NLL under the
-    * TRAINED model — directly comparable against x117's heuristic
-    * row (same columns) — plus the pruned vocab size. The oracle
-    * replays every step as generated CTE chains (suffix DP + decode
-    * walk ×3); EngineSpec pins J monotone and trained-beats-heuristic
-    * NLL. Scale: the corpus is touched once for word counts; all
-    * three decode chains are dictionary-sized. */
-  val x135UnigramEm: Q = (s, d) => {
-    val docs = Tables.documents(s, d)
-    val (wf, counts, _) = emUnigramCounts(s, d, 2, withJ = false)
-    val words = wf.select(col("w"))
-    val chars = words
-      .select(explode(transform(sequence(lit(1), length(col("w"))),
-        i => col("w").substr(i, lit(1)))).as("p"))
-      .distinct()
-    val singles = chars.join(counts, Seq("p"), "left")
-      .select(col("p"), (coalesce(col("cnt"), lit(0L)) + 1L).as("cnt"))
-    // top-16 prune via orderBy+limit (TakeOrderedAndProject, r12
-    // window audit): the piece inventory is vocabulary-sized
-    // (≤ |vocab|·16 rows) — the only corpus-growth-scaling relation
-    // any unpartitioned window in the engine ranked — so the global
-    // single-partition window sort becomes a distributed per-partition
-    // top-k + 16-row driver merge. Identical rows: row_number over
-    // (cnt DESC, p) ≤ 16 IS the (cnt DESC, p) top-16.
-    val multi = counts.filter(length(col("p")) > 1)
-      .orderBy(col("cnt").desc, col("p")).limit(16)
-      .select(col("p"), col("cnt"))
-    val pruned = singles.unionByName(multi).localCheckpoint()
-    val tot = pruned.agg(sum(col("cnt")).as("t"))
-    val nv = pruned.agg(count(lit(1)).as("n_vocab"))
-    val pscores = pruned.crossJoin(broadcast(tot))
-      .select(col("p"),
-        round(log(col("cnt").cast("double") / col("t").cast("double"))
-          * 1e4, 0).cast("long").as("sq"))
-    val dict = unigramDecode(words, pscores)
-    val sw = docs
-      .select(col("source"), explode(wsTokens(lower(col("text")))).as("w"))
-      .filter(col("w") =!= "" && length(col("w")) <= ViterbiMaxW)
-      .groupBy(col("source"), col("w")).agg(count(lit(1)).as("f"))
-    sw.join(dict, Seq("w"))
-      .groupBy(col("source"))
-      .agg(sum(col("f")).as("n_words"),
-        sum(col("f") * col("np")).as("n_pieces"),
-        sum(col("f") * -col("wq")).as("snll"))
-      .crossJoin(broadcast(nv))
-      .select(col("source"), col("n_words"), col("n_pieces"),
-        (intRoundHalfAway(col("n_pieces") * 10000L, col("n_words"))
-          .cast("double") / 1e4).as("fertility"),
-        (intRoundHalfAway(col("snll"), col("n_words"))
-          .cast("double") / 1e4).as("mean_word_nll"),
-        col("n_vocab"))
-      .orderBy(col("source"))
-  }
-
-  /** x140's blocklist — fixture-vocabulary stand-ins for C4's
-    * "dirty/naughty/obscene" word list; production swaps the literal
-    * for the real list (broadcast-joined when it outgrows an isin). */
-  private val blocklist = Seq("slow", "dup", "hash")
-
-  /** X140: blocklist document filter (C4's badwords rule, Raffel et
-    * al. 2020 §2.2 — "removed any page that contained any word on the
-    * [blocklist]") — the one famous curation gate this engine didn't
-    * yet report on: WHOLE-DOC removal on any word-boundary blocklist
-    * hit, the coarse safety filter that runs before every
-    * quality/dedup stage. Token-exact matching on the lowercased
-    * whitespace tokenization (word boundaries for free — substring
-    * matching is the known C4 false-positive failure, deliberately
-    * not replicated). Per source: docs, flagged docs, flag rate,
-    * total hit occurrences, and the token mass the filter costs —
-    * the collateral-damage number the list is priced on. One
-    * row-local scan, one groupBy(source); the blocklist rides as a
-    * broadcast literal. */
-  val x140BlocklistFilter: Q = (s, d) => {
-    val toks = filter(wsTokens(lower(col("text"))), w => w =!= "")
-    val hits = size(filter(toks,
-      w => w.isin(blocklist.map(x => x: Any): _*))).cast("long")
-    Tables.documents(s, d)
-      .select(col("source"), size(toks).cast("long").as("n_tok"),
-        hits.as("hits"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("hits") > 0, 1L).otherwise(0L)).as("n_flagged"),
-        sum(col("hits")).as("n_hits"),
-        sum(col("n_tok")).as("n_tok"),
-        sum(when(col("hits") > 0, col("n_tok")).otherwise(0L))
-          .as("tok_removed"))
-      .select(col("source"), col("n_docs"), col("n_flagged"),
-        (intRoundHalfAway(col("n_flagged") * 10000L, col("n_docs"))
-          .cast("double") / 1e4).as("flag_rate"),
-        col("n_hits"), col("n_tok"), col("tok_removed"),
-        (intRoundHalfAway(col("tok_removed") * 10000L, col("n_tok"))
-          .cast("double") / 1e4).as("tok_removed_share"))
-      .orderBy(col("source"))
-  }
-
-  /** X141: UniMax token-budget waterfilling (Chung et al. 2023) —
-    * the mixture ALLOCATOR the share tables (x27 quotas, x131 anneal,
-    * x95 temperature sweep) feed: given a total training budget B
-    * (here half the corpus' token mass) and a per-source repeat cap
-    * (2 epochs — UniMax's anti-overfit bound), allocate B as
-    * UNIFORMLY as possible subject to alloc_s ≤ cap_s. Closed-form
-    * waterfilling, no iteration: sort sources by cap; a source is
-    * SATURATED iff its cap fits even when every later source gets at
-    * least as much (cum_j + cap_j·(m−j) ≤ B); the unsaturated rest
-    * split the remainder evenly, the integer residue going +1 to the
-    * smallest (cap, source) ranks — fully deterministic, Σ alloc = B
-    * EXACTLY (pinned in EngineSpec). Everything after the one
-    * corpus-token scan runs on the |sources|-row table: two window
-    * passes and a broadcast join — the driver never sees a number. */
-  val x141UnimaxAlloc: Q = (s, d) => {
-    val caps = Tables.documents(s, d)
-      .select(col("source"), tokenCount(col("text")).cast("long").as("t"))
-      .groupBy(col("source")).agg(sum(col("t")).as("n_tok"))
-      .withColumn("cap", col("n_tok") * 2L)
-    val tot = caps.agg((call_function("div", sum(col("n_tok")), lit(2L)))
-      .as("b"), count(lit(1)).as("m"))
-    val w = Window.orderBy(col("cap"), col("source"))
-    val ranked = caps.crossJoin(broadcast(tot))
-      .withColumn("rn", row_number().over(w))
-      .withColumn("cum", sum(col("cap")).over(w))
-      .withColumn("sat",
-        col("cum") + col("cap") * (col("m") - col("rn")) <= col("b"))
-    val sag = ranked.filter(col("sat"))
-      .agg(count(lit(1)).as("jstar"), sum(col("cap")).as("spent"))
-    val lv = ranked.crossJoin(broadcast(sag))
-      .withColumn("jstar", coalesce(col("jstar"), lit(0L)))
-      .withColumn("spent", coalesce(col("spent"), lit(0L)))
-      .withColumn("level", call_function("div",
-        col("b") - col("spent"), col("m") - col("jstar")))
-      .withColumn("rem", (col("b") - col("spent"))
-        - col("level") * (col("m") - col("jstar")))
-      .withColumn("alloc", when(col("sat"), col("cap"))
-        .otherwise(col("level") +
-          when(col("rn") - col("jstar") <= col("rem"), 1L).otherwise(0L)))
-    lv.select(col("source"), col("n_tok"), col("cap"), col("alloc"),
-        (intRoundHalfAway(col("alloc") * 10000L, col("n_tok"))
-          .cast("double") / 1e4).as("epochs"),
-        col("sat").as("saturated"))
-      .orderBy(col("source"))
-  }
-
-  /** X142: label-noise detection by confident learning (Northcutt et
-    * al. 2021 — cleanlab's core rule): the rule gate LABELLED x108's
-    * seed set, and this audits those labels with the trained model —
-    * per class j, the confidence threshold t_j is the mean predicted
-    * probability of class j among examples GIVEN label j; an example
-    * whose predicted probability of the OTHER class clears that
-    * class's threshold is a suspected label error (the
-    * confident-joint off-diagonal). On this corpus the "errors" are
-    * where the linear model confidently contradicts its own teacher
-    * — exactly the review queue a label-repair pass works through
-    * (and the complement of x139: uncertainty samples where the
-    * model doesn't know, this flags where it disagrees). Integer
-    * thresholds (mean of 1e-6-quantized probs, half-away), so the
-    * flag decision is engine-exact. One scoring scan, two global
-    * means, one per-source aggregation. */
-  val x142LabelNoise: Q = (s, d) => {
-    val wdf = s.read.parquet(ensureClfWeights(s, d))
-    val docs = Tables.documents(s, d)
-    val scored = clfScores(clfFeatures(docs), wdf)
-      .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
-      .localCheckpoint()
-    val th = scored.agg(
-      intRoundHalfAway(sum(when(col("y") === 1L, col("pq")).otherwise(0L)),
-        sum(when(col("y") === 1L, 1L).otherwise(0L))).as("t1"),
-      intRoundHalfAway(
-        sum(when(col("y") === 0L, lit(1000000L) - col("pq")).otherwise(0L)),
-        sum(when(col("y") === 0L, 1L).otherwise(0L))).as("t0"))
-    scored.crossJoin(broadcast(th))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("y") === 0L && col("pq") >= col("t1"), 1L)
-          .otherwise(0L)).as("n_sus_0to1"),
-        sum(when(col("y") === 1L && lit(1000000L) - col("pq") >= col("t0"),
-          1L).otherwise(0L)).as("n_sus_1to0"),
-        max(col("t1")).as("t1"), max(col("t0")).as("t0"))
-      .select(col("source"), col("n_docs"), col("n_sus_0to1"),
-        col("n_sus_1to0"),
-        (intRoundHalfAway(
-          (col("n_sus_0to1") + col("n_sus_1to0")) * 10000L, col("n_docs"))
-          .cast("double") / 1e4).as("noise_rate"),
-        (col("t1").cast("double") / 1e6).as("t1"),
-        (col("t0").cast("double") / 1e6).as("t0"))
-      .orderBy(col("source"))
-  }
-
-  /** The Vendi-score arithmetic over a similarity matrix `k` (already
-    * divided by m): clip eigenvalues at 0, normalize to a
-    * distribution IN EXTRACTION ORDER (left-to-right folds — the
-    * oracle's list_sum order), quantize each −p·ln p term at 1e-6
-    * AFTER evaluation (the x39 rule), and return (entropySum1e6,
-    * eigenvalues). Shared by the x143 carrier replica in EngineSpec
-    * so the formula is pinned once. */
-  private[graft] def vendiEntropy(k: Array[Array[Double]]): (Long, Seq[Double]) = {
-    val eigs = graft.ml.Opq.eigensolve(k, k.length).map(_._2)
-    val lp = eigs.map(l => math.max(l, 0.0))
-    val ssum = lp.sum
-    val terms = lp.filter(_ > 0)
-      .map { l => val p = l / ssum; math.round(-p * math.log(p) * 1e6) }
-    (terms.sum, eigs)
-  }
-
-  /** X143: Vendi diversity score (Friedman & Dieng 2022) — the
-    * reference-free diversity metric a mixture designer reads as
-    * "how many EFFECTIVELY DISTINCT populations am I training on":
-    * exp of the von Neumann entropy of the label-centroid cosine
-    * similarity matrix K/m — m when all populations are orthogonal,
-    * 1 when they collapse to a point; x45's size-entropy can't see
-    * the difference between ten distinct clusters and ten copies of
-    * one. Shape: centroids by x28's exact-integer recipe (one
-    * corpus scan onto |labels|·dims cells), then EVERYTHING is
-    * dimension-bounded: the 10×10 Gram, the x65/x99b power-iteration
-    * + deflation eigensolve (driver and oracle run the SAME
-    * approximation — bit-exact by the proven recipe), and the
-    * quantized entropy fold. The corpus is touched exactly once. */
-  val x143VendiDiversity: Q = (s, d) => {
-    val cen = Tables.embeddings(s, d)
-      .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy(col("label"), col("pos"))
-      .agg(sum(floor(col("v").cast("double") * (1 << 24))).as("sv"),
-        count(lit(1)).as("n"))
-      .select(col("label"), col("pos"),
-        (col("sv").cast("double") / (col("n").cast("double") * (1 << 24)))
-          .as("comp"))
-      .collect()
-    val labels = cen.map(_.getInt(0)).distinct.sorted
-    val dims = cen.map(_.getInt(1)).max + 1
-    val c = Array.ofDim[Double](labels.length, dims)
-    cen.foreach(r =>
-      c(labels.indexOf(r.getInt(0)))(r.getInt(1)) = r.getDouble(2))
-    val nrm = c.map { row =>
-      val n = math.sqrt(row.map(x => x * x).sum); row.map(_ / n) }
-    val m = labels.length
-    val k = Array.tabulate(m, m)((i, j) =>
-      nrm(i).zip(nrm(j)).map { case (a, b) => a * b }.sum / m)
-    val (h6, _) = vendiEntropy(k)
-    val h = h6.toDouble / 1e6
-    s.createDataFrame(Seq((m.toLong,
-        math.round(h * 1e4) / 1e4.toDouble,
-        math.round(math.exp(h) * 1e4) / 1e4.toDouble,
-        math.round(math.exp(h) / m * 1e4) / 1e4.toDouble)))
-      .toDF("n_labels", "entropy", "vendi", "vendi_ratio")
-  }
-
-  /** X144: filter-rule attribution — the threshold-tuning table
-    * behind every rule-based curation stack (the Dolma/RedPajama
-    * releases publish exactly this): per rule, how many docs it
-    * fails, and how many it UNIQUELY fails (no other rule fires) —
-    * the marginal mass that rule alone removes. A rule with high
-    * fail count but near-zero unique mass is redundant (its kills
-    * are already dead); a rule with high unique mass is the one
-    * whose threshold deserves review. Five engine rules (language,
-    * minimum length, quality score, punctuation, x140's blocklist)
-    * plus the 'any' union row, computed as row-local flags in ONE
-    * corpus scan, a single aggregate, and a stack unpivot — the x21
-    * one-pass funnel discipline applied across rules instead of down
-    * a pipeline. */
-  val x144FilterAttribution: Q = (s, d) => {
-    val ltoks = filter(wsTokens(lower(col("text"))), w => w =!= "")
-    val flags = Tables.documents(s, d).select(
-        (col("lang") =!= "en").cast("long").as("f1"),
-        (tokenCount(col("text")) < 10).cast("long").as("f2"),
-        (qualityScore(col("text"), stopwords) < 0.5).cast("long").as("f3"),
-        (punctRatio(col("text")) > 0.1).cast("long").as("f4"),
-        (size(filter(ltoks, w => w.isin(blocklist.map(x => x: Any): _*)))
-          > 0).cast("long").as("f5"))
-      .withColumn("nf", (1 to 5).map(i => col(s"f$i")).reduce(_ + _))
-    val aggs = Seq(count(lit(1)).as("n_docs"),
-        sum(when(col("nf") > 0, 1L).otherwise(0L)).as("n_any")) ++
-      (1 to 5).flatMap(i => Seq(sum(col(s"f$i")).as(s"nf$i"),
-        sum(when(col(s"f$i") === 1L && col("nf") === 1L, 1L).otherwise(0L))
-          .as(s"nu$i")))
-    flags.agg(aggs.head, aggs.tail: _*)
-      .selectExpr("n_docs", """stack(6,
-        1, 'lang', nf1, nu1,
-        2, 'min_len', nf2, nu2,
-        3, 'quality', nf3, nu3,
-        4, 'punct', nf4, nu4,
-        5, 'blocklist', nf5, nu5,
-        6, 'any', n_any, CAST(NULL AS BIGINT))
-        AS (ordem, rule, n_fail, n_unique)""")
-      .select(col("ordem"), col("rule"), col("n_docs"), col("n_fail"),
-        (intRoundHalfAway(col("n_fail") * 10000L, col("n_docs"))
-          .cast("double") / 1e4).as("fail_rate"),
-        col("n_unique"),
-        when(col("n_unique").isNotNull,
-          intRoundHalfAway(col("n_unique") * 10000L, col("n_docs"))
-            .cast("double") / 1e4).as("unique_share"))
-      .orderBy(col("ordem"))
-  }
-
-  /** X146: k-center greedy coreset selection (Gonzalez 1985's
-    * farthest-point 2-approximation; Sener & Savarese 2018's
-    * active-learning coverage rule) over the IVF store's CELL
-    * REPRESENTATIVES — the diversity-maximizing counterpart of x45's
-    * per-cluster diversity report: which k cells, drawn in order,
-    * minimize the worst-case distance of any cell to its nearest
-    * selected one. Scale shape: the candidates are the persisted
-    * quantizer's 16 centroids ([[ensureIvfIndex]] — dimension-bounded
-    * by construction), so selection is a driver-side integer loop
-    * over a K-row relation; the corpus appears only through the
-    * already-built store. Distances are 6dp-quantized 1−cos with the
-    * shared index-order summation ([[graft.ml.Coreset.cosDouble]]),
-    * first pick = smallest cid, ties = smallest cid — the oracle
-    * replays every step as unrolled argmax SQL over the same Lloyd
-    * chain the x13/x31 oracles rebuild. Output: pick order, chosen
-    * cell, covering radius after each pick (non-increasing — the
-    * Gonzalez guarantee, pinned in EngineSpec with a crafted
-    * 3-cluster set where the first picks provably hit distinct
-    * clusters). */
-  val x146KcenterCoreset: Q = (s, d) => {
-    val idx = graft.ml.IvfIndex.loadCached(s, ensureIvfIndex(s, d))
-    val cents = idx.centroids.collect()
-      .map(r => (r.getAs[Long]("cid"),
-        r.getAs[scala.collection.Seq[Float]]("ce").toIndexedSeq))
-    val byId = cents.toMap
-    def dist(a: Long, b: Long): Double =
-      if (a == b) 0.0
-      else graft.ml.Coreset.round6(
-        1.0 - graft.ml.Coreset.cosDouble(byId(a), byId(b)))
-    val picks = graft.ml.Coreset.kcenterGreedy(
-      cents.map(_._1).toSeq, dist, 6)
-    s.createDataFrame(picks.map(p => (p.step.toLong, p.cid, p.radius)))
-      .toDF("step", "cid", "radius")
-      .orderBy(col("step"))
-  }
-
-  /** X147: k-anonymity risk audit (Sweeney 2002) — the privacy-side
-    * counterpart of x26's PII redaction: treat (source, lang,
-    * length-band) as the quasi-identifier tuple and measure, for the
-    * standard k ladder (2, 5, 10, 20), how many equivalence classes
-    * fall below k members and how much document mass sits in them —
-    * the re-identification risk a release under that k-anonymity
-    * target would carry. Scale shape: ONE corpus scan into a
-    * map-side-combinable class aggregation whose output is
-    * dimension-bounded (|source|x|lang|x9 length bands), then the
-    * k-sweep runs on that tiny class table against a broadcast 4-row
-    * k ladder — nothing after the first aggregate scales with the
-    * corpus. */
-  val x147KAnonymity: Q = (s, d) => {
-    val cls = Tables.documents(s, d)
-      .select(col("source"), col("lang"),
-        least(call_function("div", tokenCount(col("text")).cast("long"),
-          lit(16L)), lit(8L)).as("len_band"))
-      .groupBy(col("source"), col("lang"), col("len_band"))
-      .agg(count(lit(1)).as("n"))
-    val ks = s.createDataFrame(Seq(Tuple1(2L), Tuple1(5L), Tuple1(10L),
-      Tuple1(20L))).toDF("k")
-    cls.crossJoin(broadcast(ks))
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n_classes"),
-        sum(when(col("n") < col("k"), 1L).otherwise(0L))
-          .as("n_classes_risk"),
-        sum(when(col("n") < col("k"), col("n")).otherwise(0L))
-          .as("n_docs_risk"),
-        sum(col("n")).as("n_docs"))
-      .select(col("k"), col("n_classes"), col("n_classes_risk"),
-        col("n_docs_risk"),
-        (intRoundHalfAway(col("n_docs_risk") * 10000L, col("n_docs"))
-          .cast("double") / 1e4).as("risk_share"))
-      .orderBy(col("k"))
-  }
-
-  /** Margin scoring for [[x148MarginMining]] (exposed for the
-    * EngineSpec crafted-hub pin): given cell-bounded candidate pairs
-    * (qid, match_id, cu) with cu = ROUND(cos·10⁴) > 0, compute each
-    * side's top-4 neighborhood sums and the RATIO MARGIN
-    * margin = cos / ((kNN̄_a + kNN̄_b)/2) = 2·cu·na·nb /
-    * (sumA·nb + sumB·na) — an exact integer rational, 4dp half-away
-    * ([[intRoundHalfAway]]) — then keep the margin-argmax match per
-    * query. Two windowed top-4 passes + one join over the candidate
-    * table; nothing here rescans vectors. */
-  private[graft] def marginTopPairs(cand: DataFrame): DataFrame = {
-    val wq = Window.partitionBy("qid").orderBy(col("cu").desc, col("match_id"))
-    val wm = Window.partitionBy("match_id").orderBy(col("cu").desc, col("qid"))
-    val aSums = cand.withColumn("rk", row_number().over(wq))
-      .filter(col("rk") <= 4).groupBy("qid")
-      .agg(sum(col("cu")).as("sum_a"), count(lit(1)).as("na"))
-    val bSums = cand.withColumn("rk", row_number().over(wm))
-      .filter(col("rk") <= 4).groupBy("match_id")
-      .agg(sum(col("cu")).as("sum_b"), count(lit(1)).as("nb"))
-    val scored = cand.join(aSums, "qid").join(bSums, "match_id")
-      .withColumn("margin_q", intRoundHalfAway(
-        lit(2L) * col("cu") * col("na") * col("nb") * lit(10000L),
-        col("sum_a") * col("nb") + col("sum_b") * col("na")))
-    val wbest = Window.partitionBy("qid")
-      .orderBy(col("margin_q").desc, col("cu").desc, col("match_id"))
-    scored.withColumn("rk", row_number().over(wbest)).filter(col("rk") === 1)
-      .select(col("qid"), col("match_id"),
-        (col("cu").cast("double") / 1e4).as("cos"),
-        (col("margin_q").cast("double") / 1e4).as("margin"),
-        (col("margin_q") >= 10500L).as("accepted"))
-  }
-
-  /** X148: margin-based pair mining (Artetxe & Schwenk 2019,
-    * "Margin-based parallel corpus mining with multilingual sentence
-    * embeddings" — the LASER/CCMatrix bitext rule): x111 scores
-    * candidate pairs by ABSOLUTE cosine, which hub vectors defeat —
-    * a vector generically close to everything tops every query's
-    * ranking without being anyone's translation. The published fix
-    * normalizes by both sides' average similarity to their own k=4
-    * nearest candidates: margin = cos / ((kNN̄_q + kNN̄_m)/2); a hub's
-    * own dense neighborhood deflates every margin it appears in (the
-    * EngineSpec crafted-hub pin shows raw-cos preferring the hub and
-    * margin flipping to the true match). The two halves of the vector
-    * space (vec_id parity) stand in for the two languages. Scale
-    * shape: candidates are bounded by the persisted IVF index's cells
-    * (the x35/x119 contract — never corpus²); the margin adds two
-    * windowed top-4 passes over that candidate table; acceptance at
-    * margin ≥ 1.05 (CCMatrix operates ≈1.06). */
-  val x148MarginMining: Q = (s, d) => {
-    val cells = graft.ml.IvfIndex.loadCached(s, ensureIvfIndex(s, d)).cells
-    val a = cells.filter(pmod(col("vec_id"), lit(2L)) === 0)
-      .select(col("cell"), col("vec_id").as("qid"), col("embedding").as("ea"))
-    val b = cells.filter(pmod(col("vec_id"), lit(2L)) === 1)
-      .select(col("cell"), col("vec_id").as("match_id"),
-        col("embedding").as("eb"))
-    val cand = a.join(b, Seq("cell"))
-      .withColumn("cu",
-        round(cosineSim(col("ea"), col("eb")) * 1e4, 0).cast("long"))
-      .filter(col("cu") > 0)
-      .select(col("qid"), col("match_id"), col("cu"))
-    marginTopPairs(cand).orderBy(col("qid"))
-  }
-
-  /** Reducible loss in integer 1e-4 units for [[x149RholossSelect]]
-    * (exposed for the EngineSpec crafted-corpus pin): current-model
-    * loss = unigram MLE NLL over the POOL itself ([[uniDocNllQ]] —
-    * RHO's training loss, the model HAS seen its own batch), minus
-    * reference loss = add-one (Laplace) bigram NLL under counts from
-    * the HELD-OUT train split — p(w₂|w₁) = (c₂+1)/(c₁+V), defined for
-    * unseen grams, and crucially NEVER trained on the pool docs being
-    * scored: a corpus-wide MLE reference would memorize singleton
-    * gibberish to zero loss and invert the selection (the mistake
-    * RHO-LOSS's held-out irreducible-loss model exists to prevent).
-    * Pool docs need ≥1 bigram (inner semantics). */
-  private[graft] def rholossRedQ(pool: DataFrame, train: DataFrame): DataFrame = {
-    val u = uniDocNllQ(pool).select(col("doc_id"), col("u_q"))
-    val tr = train.select(wsTokens(col("text")).as("toks"))
-    val uni = tr.select(explode(col("toks")).as("w1"))
-      .groupBy(col("w1")).agg(count(lit(1)).as("c1"))
-    val vv = uni.agg((count(lit(1)) + 1L).as("v"))
-    val cnt2 = tr.select(explode(allShinglesOfToks(col("toks"), 2)).as("g"))
-      .groupBy(col("g")).agg(count(lit(1)).as("c2"))
-    val poolBi = pool.select(col("doc_id"), wsTokens(col("text")).as("toks"))
-      .select(col("doc_id"), explode(allShinglesOfToks(col("toks"), 2)).as("g"))
-      .withColumn("w1", substring_index(col("g"), " ", 1))
-    val r = poolBi
-      .join(cnt2, Seq("g"), "left").join(uni, Seq("w1"), "left")
-      .crossJoin(broadcast(vv))
-      .withColumn("lp_q", round(-log(
-          (coalesce(col("c2"), lit(0L)).cast("double") + 1.0) /
-          (coalesce(col("c1"), lit(0L)).cast("double")
-            + col("v").cast("double"))) * 1e4, 0).cast("long"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("nb"), sum(col("lp_q")).as("s2"))
-      .select(col("doc_id"), intRoundHalfAway(col("s2"), col("nb")).as("r_q"))
-    u.join(r, Seq("doc_id"))
-      .select(col("doc_id"), (col("u_q") - col("r_q")).as("red_q"))
-  }
-
-  /** X149: reducible-loss data selection (RHO-LOSS — Mindermann et
-    * al. 2022, "Prioritized training on points that are learnable,
-    * worth learning, and not yet learnt"): prioritize pool documents
-    * where the current model's own-batch loss is high but a reference
-    * model trained on HELD-OUT data scores them low — high-loss-
-    * everywhere points are noise (unlearnable), low-loss-everywhere
-    * points are already learnt; the gap is what training can still
-    * buy. Pool = x36's val+test hash split (the incoming batch);
-    * reference counts come from the train split only (see
-    * [[rholossRedQ]] for why held-out matters). Scores stay in
-    * integer 1e-4 units so the difference is exact; selection is the
-    * global top decile by the x131 histogram nearest-rank cut (never
-    * a window over raw docs). Scale shape: one scan per model (both
-    * map-side-combinable gram aggregations; the pool-vs-train split
-    * is a row-local hash predicate on the same scan), a
-    * value-histogram cut, and a per-source rollup — nothing pairwise
-    * anywhere. */
-  val x149RholossSelect: Q = (s, d) => {
-    val docs = Tables.documents(s, d)
-    val balde = pmod(
-      conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long"), lit(100L))
-    // checkpointed once: feeds the cut histogram AND the per-source
-    // aggregation (the x131 precedent)
-    val scored = rholossRedQ(docs.filter(balde >= 90),
-        docs.filter(balde < 90))
-      .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
-      .localCheckpoint()
-    val hist = scored.groupBy(col("red_q")).agg(count(lit(1)).as("cnt"))
-    val tot = hist.agg(sum(col("cnt")).as("n"))
-    val cut = hist
-      .withColumn("cum", sum(col("cnt")).over(Window.orderBy(col("red_q"))))
-      .crossJoin(broadcast(tot))
-      .filter(col("cum") * 10L >= col("n") * 9L)
-      .agg(min(col("red_q")).as("cut90"))
-    scored.crossJoin(broadcast(cut))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("red_q") > col("cut90"), 1L).otherwise(0L))
-          .as("n_sel"),
-        sum(col("red_q")).as("sum_red"),
-        sum(when(col("red_q") > col("cut90"), col("red_q")).otherwise(0L))
-          .as("sum_red_sel"))
-      .select(col("source"), col("n_docs"), col("n_sel"),
-        (intRoundHalfAway(col("n_sel") * 10000L, col("n_docs"))
-          .cast("double") / 1e4).as("sel_rate"),
-        (intRoundHalfAway(col("sum_red"), col("n_docs"))
-          .cast("double") / 1e4).as("mean_red"),
-        when(col("n_sel") > 0,
-          intRoundHalfAway(col("sum_red_sel"), col("n_sel"))
-            .cast("double") / 1e4).as("mean_red_sel"))
-      .orderBy(col("source"))
-  }
-
-  /** X126: winnowing fingerprint audit — the index-compression report
-    * for [[graft.dedup.NearDup.winnowedFingerprints]] (MOSS's
-    * selection rule), CORPUS-WIDE: per doc, the k-gram count,
-    * selected-position count, selection density (expected
-    * 2/(w+1) ≈ 0.4 at w=4 — versus 1.0 for every-k-gram), and the
-    * number of OTHER docs sharing at least one winnowed fingerprint
-    * (the candidate fan-in the compressed index produces; shared-run
-    * connectivity under the winnowing guarantee is pinned in
-    * EngineSpec on crafted pairs). Reads the INGEST-STAGED
-    * fingerprint store ([[ensureWinnowStore]], the table x134 also
-    * probes — rounds ≤9 re-winnowed a 200-doc sliver inline here;
-    * the staged store removed both the rescan and the cap, round-9
-    * verdict item 3). Shuffles: the fp-keyed neighbor self-join on
-    * the winnowed posting lists (~2.5× smaller than every-k-gram —
-    * that saving is the operator) and the output sort. Fan-in cost
-    * is Σ_fp |posting(fp)|² — winnowing keeps postings short on
-    * natural text; a production corpus with template-hot
-    * fingerprints would df-cap the posting lists first (the x66
-    * boilerplate contract), a REPORTED cut, not a silent one. */
-  val x126Winnowing: Q = (s, d) => {
-    val wf = s.read.parquet(ensureWinnowStore(s, d))
-    val ex = wf.select(col("doc_id"), explode(col("fps")).as("fp"))
-    val nbr = ex.as("a").join(ex.as("b"), Seq("fp"))
-      .filter(col("a.doc_id") =!= col("b.doc_id"))
-      .groupBy(col("a.doc_id"))
-      .agg(count_distinct(col("b.doc_id")).as("n_nbr"))
-      .select(col("doc_id"), col("n_nbr"))
-    wf.join(nbr, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("m"), col("n_sel"),
-        (intRoundHalfAway(col("n_sel") * 10000L, col("m"))
-          .cast("double") / 1e4).as("density"),
-        coalesce(col("n_nbr"), lit(0L)).as("n_nbr"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Deterministic ±1 sign vector for the x125 JL projection row `c`
-    * — md5 parity of "jl-c-i", the x6 plane recipe (computed at PLAN
-    * time, embedded as literal arrays). */
-  private def jlSigns(c: Int, dims: Int): Seq[Double] = (0 until dims).map { i =>
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"jl-$c-$i".getBytes("UTF-8"))
-    val v = ((h(0) & 0xff) << 8) | (h(1) & 0xff)
-    if (v % 2 == 0) 1.0 else -1.0
-  }
-
-  /** X125: random-projection (Johnson–Lindenstrauss) audit — the
-    * DATA-INDEPENDENT 4× dimension reduction the learned family
-    * (x49 PCA / x65 whitening / x43 SQ8 / x99 PQ) can't give you on
-    * day one: a ±1 sign matrix (Achlioptas) needs no training pass,
-    * no store, and no refresh on drift, so it is what a pipeline
-    * bootstraps ANN with before codebooks exist. 64-d embeddings
-    * project onto 16 md5-parity sign rows; per query (the x74 sliver
-    * contract): recall@10 of projected-L2 ranking vs exact-L2
-    * ranking, and the distance-distortion spread — per-pair ratio
-    * d²proj/(16·d²orig) (unbiased at 1 under E[±1] rows), 1e-4
-    * quantized, reported mean/min/max. Shape: signs are plan-time
-    * literals, projection is one row-local fold per row, the scored
-    * sliver is |queries|×corpus exactly like x74 — no training job
-    * anywhere in the plan. */
-  val x125JlProjection: Q = (s, d) => {
-    val r = 16; val dims = 64
-    val base = spread(s, Tables.embeddings(s, d))
-      .select(col("vec_id"), col("embedding"),
-        array((0 until r).map { c =>
-          val signs = array(jlSigns(c, dims).map(lit): _*)
-          aggregate(zip_with(col("embedding"), signs,
-            (x, sg) => x.cast("double") * sg), lit(0.0), (acc, v) => acc + v)
-        }: _*).as("ys"))
-    val queries = base.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        col("ys").as("qy"))
-    def l2(a: Column, b: Column) = aggregate(zip_with(a, b,
-      (x, y) => (x.cast("double") - y.cast("double"))
-        * (x.cast("double") - y.cast("double"))),
-      lit(0.0), (acc, v) => acc + v)
-    val scored = base
-      .select(col("vec_id").as("nid"), col("embedding").as("ne"),
-        col("ys").as("ny"))
-      .crossJoin(broadcast(queries))
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("d2o", l2(col("qe"), col("ne")))
-      .withColumn("d2p", l2(col("qy"), col("ny")))
-    val wo = Window.partitionBy(col("qid"))
-      .orderBy(round(col("d2o"), 6), col("nid"))
-    val wp = Window.partitionBy(col("qid"))
-      .orderBy(round(col("d2p"), 6), col("nid"))
-    scored
-      .withColumn("ro", row_number().over(wo))
-      .withColumn("rp", row_number().over(wp))
-      .withColumn("rq4", when(col("d2o") > 0,
-        round(col("d2p") / (lit(16.0) * col("d2o")) * 1e4, 0).cast("long")))
-      .groupBy(col("qid"))
-      .agg(sum(when(col("ro") <= 10 && col("rp") <= 10, 1L).otherwise(0L))
-          .as("n_match"),
-        count(col("rq4")).as("n_ratio"),
-        sum(col("rq4")).as("sr"), min(col("rq4")).as("mnr"),
-        max(col("rq4")).as("mxr"))
-      .select(col("qid"), col("n_match"),
-        (col("n_match").cast("double") / 10).as("recall_at_10"),
-        (intRoundHalfAway(col("sr"), col("n_ratio"))
-          .cast("double") / 1e4).as("ratio_mean"),
-        (col("mnr").cast("double") / 1e4).as("ratio_min"),
-        (col("mxr").cast("double") / 1e4).as("ratio_max"))
-      .orderBy(col("qid"))
-  }
-
-  /** X134: cross-source shared-RUN overlap — x47's inter-source
-    * audit with exact-run semantics: x47 estimates whole-corpus
-    * shingle-set Jaccard per source pair (MinHash — "how similar are
-    * these feeds"), while this counts the WINNOWED fingerprints two
-    * sources share — every shared fingerprint certifies an actual
-    * ≥ w+k−1-token run appearing in both (the winnowing guarantee),
-    * which is the syndication/template-sharing signal a mixture
-    * designer prices source independence with. Reads the INGEST-
-    * STAGED fingerprint table ([[ensureWinnowStore]] — production
-    * winnows once at ingest; the corpus-wide positional-hash scan is
-    * measured standalone in x126's compute path, and the ORACLE
-    * recomputes it from scratch, re-proving the staging on every
-    * run): DISTINCT (source, fp) projection, fp-keyed self-join
-    * bounded by |sources| per fingerprint, onto a |sources|² grid
-    * with per-pair overlap coefficient shared/min(|A|, |B|).
-    * Checksums cross the wire, never text. */
-  val x134SourceRunOverlap: Q = (s, d) => {
-    val docs = Tables.documents(s, d)
-    // no checkpoint: every consumer re-reads the MATERIALIZED store
-    // parquet (cheap, and it keeps the staged-read contract visible
-    // in the executed plan for PlansSpec)
-    val fs = s.read.parquet(ensureWinnowStore(s, d))
-      .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
-      .select(col("source"), explode(col("fps")).as("fp"))
-      .distinct()
-    val tot = fs.groupBy(col("source")).agg(count(lit(1)).as("nf"))
-    fs.as("a").join(fs.as("b"), Seq("fp"))
-      .filter(col("a.source") < col("b.source"))
-      .groupBy(col("a.source"), col("b.source"))
-      .agg(count(lit(1)).as("shared"))
-      .select(col("a.source").as("source_a"), col("b.source").as("source_b"),
-        col("shared"))
-      .join(broadcast(tot.select(col("source").as("source_a"),
-        col("nf").as("nfa"))), Seq("source_a"))
-      .join(broadcast(tot.select(col("source").as("source_b"),
-        col("nf").as("nfb"))), Seq("source_b"))
-      .select(col("source_a"), col("source_b"), col("shared"),
-        (intRoundHalfAway(col("shared") * 10000L,
-          least(col("nfa"), col("nfb"))).cast("double") / 1e4)
-          .as("overlap_coef"))
-      .orderBy(col("source_a"), col("source_b"))
-  }
-
-  /** X132: pagination-stitch detection — the crawl-reconstruction
-    * operator: an article split across pages re-enters the corpus as
-    * separate docs whose boundary pages SHARE a template overlap
-    * (nav/teaser text repeated at page joints), and training on the
-    * fragments both duplicates the overlap and severs long-range
-    * context. A doc pair (A, B) is a stitch candidate when A's
-    * LAST-8-token fingerprint equals B's FIRST-8-token fingerprint —
-    * two row-local md5s per doc, one fp-keyed equi-join (never text
-    * vs text), output is the candidate continuation edges a
-    * reassembly pass consumes. Runs on the staged paginated corpus
-    * ([[ensurePlantedFixtures]]'s split plant — fixture-side per the
-    * round-8 convention); EngineSpec pins every planted (part1,
-    * part2) edge recovered. */
-  val x132PaginationStitch: Q = (s, d) => {
-    val pag = s.read
-      .parquet(s"${ensurePlantedFixtures(s, d)}/docs_paginated")
-    val t = col("toks")
-    val hf = pag.select(col("doc_id"), wsTokens(col("text")).as("toks"))
-      .filter(size(t) >= 8)
-      .select(col("doc_id"),
-        md5(array_join(slice(t, 1, 8), " ")).as("head_fp"),
-        md5(array_join(slice(t, size(t) - 7, lit(8)), " ")).as("tail_fp"))
-    hf.as("a").join(hf.as("b"),
-        col("a.tail_fp") === col("b.head_fp") &&
-          col("a.doc_id") =!= col("b.doc_id"))
-      .select(col("a.doc_id").as("prev_id"), col("b.doc_id").as("next_id"))
-      .orderBy(col("prev_id"), col("next_id"))
-  }
-
-  /** X131: anneal-phase data selection — the Llama-3-style
-    * mid-training move: the final training phase up-weights a small,
-    * highest-quality slice, and this carrier computes that slice's
-    * datasheet: docs scored under the REGISTRY weights, a GLOBAL
-    * nearest-rank 90th-percentile cut picked from the bounded
-    * (pq, count) histogram (pq ∈ 0..10⁶ — at most 10⁶+1 rows
-    * regardless of corpus size, the x32/x130 method), strict `>`
-    * keeps AT MOST 10% corpus-wide, and per source the report carries
-    * doc and TOKEN mass selected — the number the anneal epoch's
-    * budget is planned with (quality concentrates unevenly across
-    * sources; the doc share and the token share diverge, and
-    * training buys tokens). One scoring pass + one histogram + one
-    * broadcast-cut aggregation. */
-  val x131AnnealSelect: Q = (s, d) => {
-    val wdf = s.read.parquet(ensureClfWeights(s, d))
-    val docs = Tables.documents(s, d)
-    // checkpointed once: the scored table feeds the cut histogram AND
-    // the per-source aggregation — without the pin the feature-build
-    // scan re-runs per consumer (the x126/x73 sliver precedent)
-    val scored = clfScores(clfFeatures(docs), wdf)
-      .join(docs.select(col("doc_id"), col("source"),
-        tokenCount(col("text")).cast("long").as("n_tok")), Seq("doc_id"))
-      .localCheckpoint()
-    val hist = scored.groupBy(col("pq")).agg(count(lit(1)).as("cnt"))
-    val tot = hist.agg(sum(col("cnt")).as("n"))
-    val cut = hist
-      .withColumn("cum", sum(col("cnt")).over(Window.orderBy(col("pq"))))
-      .crossJoin(broadcast(tot))
-      .filter(col("cum") * 10L >= col("n") * 9L)
-      .agg(min(col("pq")).as("cut90"))
-    scored.crossJoin(broadcast(cut))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("pq") > col("cut90"), 1L).otherwise(0L)).as("n_sel"),
-        sum(col("n_tok")).as("n_tok"),
-        sum(when(col("pq") > col("cut90"), col("n_tok")).otherwise(0L))
-          .as("tok_sel"))
-      .select(col("source"), col("n_docs"), col("n_sel"),
-        (intRoundHalfAway(col("n_sel") * 10000L, col("n_docs"))
-          .cast("double") / 1e4).as("sel_rate"),
-        col("n_tok"), col("tok_sel"),
-        (intRoundHalfAway(col("tok_sel") * 10000L, col("n_tok"))
-          .cast("double") / 1e4).as("tok_share"))
-      .orderBy(col("source"))
-  }
-
-  /** X130: robust quality-outlier audit (median/MAD) — the
-    * distribution-free twin of the z-score family (x57/x80): per
-    * source, the nearest-rank median of the 1e4-integer quality
-    * score, the median absolute deviation around it, and the count
-    * of docs beyond 3·MAD — the feed-corruption tripwire that a mean
-    * /σ monitor misses exactly when it matters (a corrupted slice
-    * drags the mean toward itself; the median doesn't move). Medians
-    * are picked from (source, q4) COUNT HISTOGRAMS — never a
-    * window over raw docs — so the only per-source ordering is over
-    * distinct score values (≤ 10⁴ rows per source regardless of
-    * corpus size: the x32/x44 histogram method, skew-safe by
-    * construction); the deviation pass rides the broadcast median
-    * table. Everything integer until the presentation columns. */
-  val x130QualityMad: Q = (s, d) => {
-    // ONE corpus scan (optimization r12, guide §2.3 — shuffle counts,
-    // not payloads): every downstream statistic — both nearest-rank
-    // medians, the deviation distribution and the outlier rollup — is
-    // a pure function of the bounded (source, q4) count histogram
-    // (≤ 10⁴+1 rows per source), so the histogram is computed once and
-    // pinned (the x131 scored-table precedent; bounded, never
-    // corpus-sized) and every pass folds IT. The former shape
-    // re-executed the corpus scan + qualityScore (≈7 regex passes per
-    // doc) THREE times: the median histogram, the per-doc deviation
-    // pass, and the final rollup. A doc's deviation |q4 − med| depends
-    // only on its q4 bucket, so the deviation distribution is the same
-    // histogram re-keyed: identical integer counts, identical medians.
-    val hist = Tables.documents(s, d)
-      .select(col("source"),
-        round(qualityScore(col("text"), stopwords) * 1e4, 0)
-          .cast("long").as("q4"))
-      .groupBy(col("source"), col("q4")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
-    def nearestRankMedianH(h: DataFrame, vc: String): DataFrame = {
-      val tot = h.groupBy(col("source")).agg(sum(col("cnt")).as("n"))
-      h
-        .withColumn("cum", sum(col("cnt")).over(
-          Window.partitionBy(col("source")).orderBy(col(vc))))
-        .join(broadcast(tot), Seq("source"))
-        .filter(col("cum") * 2L >= col("n") + 1L)
-        .groupBy(col("source"))
-        .agg(min(col(vc)).as("med"), min(col("n")).as("n"))
-    }
-    val med = nearestRankMedianH(hist, "q4")
-      .select(col("source"), col("med").as("medq"), col("n"))
-    val dev = hist.join(broadcast(med), Seq("source"))
-      .select(col("source"), abs(col("q4") - col("medq")).as("d4"),
-        col("cnt"))
-      .groupBy(col("source"), col("d4")).agg(sum(col("cnt")).as("cnt"))
-    val mad = nearestRankMedianH(dev, "d4")
-      .select(col("source"), col("med").as("madq"))
-    val cut = med.join(mad, Seq("source"))
-    hist.join(broadcast(cut), Seq("source"))
-      .groupBy(col("source"))
-      .agg(sum(col("cnt")).as("n_docs"),
-        sum(when(abs(col("q4") - col("medq")) > lit(3L) * col("madq"),
-          col("cnt")).otherwise(0L)).as("n_outliers"),
-        min(col("medq")).as("medq"), min(col("madq")).as("madq"))
-      .select(col("source"), col("n_docs"),
-        (col("medq").cast("double") / 1e4).as("med_q"),
-        (col("madq").cast("double") / 1e4).as("mad_q"),
-        col("n_outliers"),
-        (intRoundHalfAway(col("n_outliers") * 10000L, col("n_docs"))
-          .cast("double") / 1e4).as("outlier_rate"))
-      .orderBy(col("source"))
-  }
-
-  /** X128: pairing-consistency audit — x104 checks a vector EXISTS
-    * for every doc; this checks the right one does: exact-duplicate
-    * documents (same text fingerprint) must carry IDENTICAL paired
-    * vectors, or the pairing pipeline mismapped a re-crawl — the
-    * "same content, same features" invariant every multimodal ingest
-    * is graded on. Reads the STAGED paired-feature table
-    * ([[ensurePlantedFixtures]]'s `vecs_paired`, which plants a
-    * deterministic hash-selected slice of divergent copies — the
-    * round-8 fixture-side-planting convention, so the query body is
-    * purely operational); per same-text family (≥2 members): member
-    * count, distinct vector checksums, consistency flag. The oracle
-    * rebuilds plant and audit from the base tables, re-proving the
-    * staging bit-identical on every run. Shape: one doc-keyed join +
-    * one family-keyed aggregation; checksums (not vectors) cross the
-    * wire. */
-  val x128PairingConsistency: Q = (s, d) => {
-    val paired = s.read
-      .parquet(s"${ensurePlantedFixtures(s, d)}/vecs_paired")
-    corpusWithDupes(s, d).filter(col("doc_id") % 1000000 < 200)
-      .select(col("doc_id"), md5(col("text")).as("fp"))
-      .join(paired, Seq("doc_id"))
-      .groupBy(col("fp"))
-      .agg(min(col("doc_id")).as("family_id"),
-        count(lit(1)).as("n_members"),
-        count_distinct(col("vfp")).as("n_vfp"))
-      .filter(col("n_members") >= 2)
-      .select(col("family_id"), col("n_members"), col("n_vfp"),
-        (col("n_vfp") === 1).as("consistent"))
-      .orderBy(col("family_id"))
-  }
-
-  /** X124: b-bit minwise signature compression audit (Li & König
-    * 2010) — the scale lever for the x60 signature store: keeping
-    * only the low 4 bits of each minhash slot shrinks signatures 8×
-    * (at 100 TB the store IS the working set), and the collision-
-    * corrected estimator Ĵ_b = (agree_b − 1)/(k − 1)·(k/k)… here
-    * (agree_b − k/2ᵇ)/(k − k/2ᵇ) = (agree_b − 1)/15 at k=16, b=4
-    * pays for it in variance. Per exact-Jaccard decile band (integer
-    * banding — no float boundary), over the banded-LSH candidate
-    * pairs: pair count, total slot agreements (full vs b-bit — the
-    * b-bit count is provably ≥ the full count, pinned), and the mean
-    * absolute estimator error of each width against exact Jaccard —
-    * every per-pair error an exact-rational [[intRoundHalfAway]]
-    * quantization, so the whole table is integer arithmetic after the
-    * one candidate verify. Same corpus and cost contract as x2. */
-  val x124BbitMinhash: Q = (s, d) => {
-    val pairs = graft.dedup.NearDup.bbitCandidateAgreement(
-      spread(s, corpusWithDupes(s, d).filter(col("doc_id") % 1000000 < 200)))
-    pairs
-      .withColumn("band",
-        least(call_function("div", col("inter") * 10L, col("unn")), lit(9L)))
-      .withColumn("efq", intRoundHalfAway(
-        abs(col("agree_full") * col("unn") - col("inter") * 16L) * 10000L,
-        lit(16L) * col("unn")))
-      .withColumn("ebq", intRoundHalfAway(
-        abs((col("agree_b") - 1L) * col("unn") - col("inter") * 15L) * 10000L,
-        lit(15L) * col("unn")))
-      .groupBy(col("band"))
-      .agg(count(lit(1)).as("n_pairs"),
-        sum(col("agree_full")).as("sum_agree_full"),
-        sum(col("agree_b")).as("sum_agree_b"),
-        sum(col("efq")).as("sef"), sum(col("ebq")).as("seb"))
-      .select(col("band"), col("n_pairs"), col("sum_agree_full"),
-        col("sum_agree_b"),
-        (intRoundHalfAway(col("sef"), col("n_pairs"))
-          .cast("double") / 1e4).as("err_full"),
-        (intRoundHalfAway(col("seb"), col("n_pairs"))
-          .cast("double") / 1e4).as("err_bbit"))
-      .orderBy(col("band"))
-  }
-
-  /** X122: quality-classifier filter APPLICATION — the production
-    * gate itself: x108 trains the model, x118 calibrates it, this
-    * runs it — every doc scored under the REGISTRY weights
-    * ([[ensureClfWeights]], never a retrain) and kept iff p ≥ 0.5,
-    * reported per source as the kept/total funnel plus the
-    * model-vs-rule-gate agreement rate (the distillation-fidelity
-    * number that decides when the cheap model can replace the rule
-    * bundle in the ingest path). Scoring is x118's exact quantization
-    * contract; everything after the one feature scan is a 68-row
-    * broadcast join and doc- then source-keyed map-side-combinable
-    * aggregation. Ratios pure-BIGINT [[intRoundHalfAway]]. */
-  val x122ClfFilter: Q = (s, d) => {
-    val wdf = s.read.parquet(ensureClfWeights(s, d))
-    val tf = clfTf1(s, d)
-    clfScores(tf, wdf)
-      .join(Tables.documents(s, d).select(col("doc_id"), col("source")),
-        Seq("doc_id"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("pq") >= 500000L, 1L).otherwise(0L)).as("n_kept"),
-        sum(when((col("pq") >= 500000L) === (col("y") === 1L), 1L)
-          .otherwise(0L)).as("n_agree"))
-      .select(col("source"), col("n_docs"), col("n_kept"),
-        (intRoundHalfAway(col("n_kept") * 10000L, col("n_docs"))
-          .cast("double") / 1e4).as("keep_rate"),
-        col("n_agree"),
-        (intRoundHalfAway(col("n_agree") * 10000L, col("n_docs"))
-          .cast("double") / 1e4).as("agree_rate"))
-      .orderBy(col("source"))
-  }
-
-  /** X150: EL2N data-diet pruning (Paul et al. 2021, "Deep learning
-    * on a data diet") — the x131/x139 selection family's PRUNING
-    * member: score every training doc by its error L2 norm under the
-    * registry model (binary LR ⇒ EL2N = |p − y|, exact in the 1e-6
-    * integer units [[clfScores]] already emits), then drop the
-    * EASIEST fifth (lowest EL2N — the confidently-correct examples
-    * training no longer needs) via the x131 histogram nearest-rank
-    * cut at the 20th percentile. Reports, per source, the prune mass
-    * and the CLASS-BALANCE SHIFT (positive share before vs after) —
-    * the documented data-diet hazard: easy examples concentrate in
-    * the majority class, so naive pruning skews labels. Scale shape:
-    * one registry-scoring scan (broadcast 68-row weight table), a
-    * value histogram (≤10⁶+1 distinct values regardless of corpus
-    * size), one rollup. Production scores against the registry copy
-    * — never retrains (the x98 staged contract); the oracle retrains
-    * from scratch, re-proving the registry every run. */
-  val x150El2nPrune: Q = (s, d) => {
-    val wdf = s.read.parquet(ensureClfWeights(s, d))
-    val (tf, _) = qualityClfTf(s, d)
-    // checkpointed once: feeds the cut histogram AND the rollup
-    val scored = clfScores(tf, wdf)
-      .withColumn("el2n_q", abs(col("pq") - col("y") * 1000000L))
-      .join(Tables.documents(s, d).select(col("doc_id"), col("source")),
-        Seq("doc_id"))
-      .localCheckpoint()
-    val hist = scored.groupBy(col("el2n_q")).agg(count(lit(1)).as("cnt"))
-    val tot = hist.agg(sum(col("cnt")).as("n"))
-    val cut = hist
-      .withColumn("cum", sum(col("cnt")).over(Window.orderBy(col("el2n_q"))))
-      .crossJoin(broadcast(tot))
-      .filter(col("cum") * 5L >= col("n"))
-      .agg(min(col("el2n_q")).as("cut20"))
-    scored.crossJoin(broadcast(cut))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("el2n_q") < col("cut20"), 1L).otherwise(0L))
-          .as("n_pruned"),
-        sum(col("y")).as("n_pos"),
-        sum(when(col("el2n_q") >= col("cut20"), col("y")).otherwise(0L))
-          .as("pos_kept"))
-      .select(col("source"), col("n_docs"), col("n_pruned"),
-        (intRoundHalfAway(col("n_pruned") * 10000L, col("n_docs"))
-          .cast("double") / 1e4).as("prune_rate"),
-        (intRoundHalfAway(col("n_pos") * 10000L, col("n_docs"))
-          .cast("double") / 1e4).as("pos_share_before"),
-        when(col("n_docs") > col("n_pruned"),
-          intRoundHalfAway(col("pos_kept") * 10000L,
-            col("n_docs") - col("n_pruned")).cast("double") / 1e4)
-          .as("pos_share_after"))
-      .orderBy(col("source"))
-  }
-
-  /** X160: KMV distinct-count sketch (Bar-Yossef et al. 2002's
-    * k-minimum-values estimator; Beyer et al. 2007's unbiased form
-    * (k−1)·M/h_k) — the DISTINCT-count member of the sketch-twin
-    * family (a20b approx-percentile, x76 vocab sketch, x102 CMS):
-    * per source, keep only the k = 64 smallest 32-bit token hashes —
-    * the bounded state a shard ships for a mergeable union-distinct
-    * at 100 TB (union = merge-and-keep-k-smallest; exact distinct
-    * would ship the vocabulary) — and estimate the distinct count as
-    * the exact integer rational (k−1)·2³²/h_k, with the standard
-    * exact fallback when a source holds fewer than k distinct
-    * tokens. Reported beside exact truth + relative error, the
-    * sketch-vs-truth contract. Hash = the engine-portable md5₃₂ both
-    * engines already share; the k-smallest selection is a
-    * per-source window over the DISTINCT-token relation (vocabulary-
-    * sized, never corpus-sized). */
-  val x160KmvDistinct: Q = (s, d) => {
-    val hv = Tables.documents(s, d)
-      .select(col("source"), explode(wsTokens(col("text"))).as("w"))
-      .distinct()
-      .select(col("source"), graft.dedup.NearDup.md5Hash32(col("w")).as("h"))
-    val exact = hv.groupBy(col("source")).agg(count(lit(1)).as("n_exact"))
-    // ties on h leave WHICH row sits at rank 64 arbitrary, but the h
-    // VALUE at multiset rank 64 is deterministic — and h is all we keep
-    val kth = hv
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("source")).orderBy(col("h"))))
-      .filter(col("rk") === 64)
-      .select(col("source"), col("h").as("h_k"))
-    exact.join(kth, Seq("source"), "left")
-      .select(col("source"), col("n_exact"),
-        when(col("h_k").isNotNull,
-          intRoundHalfAway(lit(63L) * 4294967296L,
-            greatest(col("h_k"), lit(1L))))
-          .otherwise(col("n_exact")).as("est"))
-      .select(col("source"), col("n_exact"), col("est"),
-        (intRoundHalfAway(abs(col("est") - col("n_exact")) * 10000L,
-          col("n_exact")).cast("double") / 1e4).as("rel_error"))
-      .orderBy(col("source"))
-  }
-
-  /** X161: weighted reservoir sampling (Efraimidis & Spirakis 2006's
-    * A-ES: key = u^{1/w}, keep the top-k keys) — the distributed
-    * weighted-sampling-WITHOUT-replacement primitive the mixture
-    * operators (x16 stratified, x70 hash-Bernoulli) don't cover:
-    * Bernoulli thinning can't hit an exact k, and naive
-    * weight-proportional draws need sequential state; A-ES is one
-    * row-local key per doc + a mergeable top-k — THE shape for "give
-    * me exactly 50 docs, probability ∝ length" at 100 TB (TakeOrdered
-    * partial heaps, no global sort). Determinism: u = (md5₃₂+1)/2³²
-    * (engine-portable, never 0), the log-domain key ln(u)/w (the
-    * monotone image of u^{1/w}) is ONE composite double expression
-    * quantized at 1e-6 after evaluation (x39 rule), ties by doc_id.
-    * Weights = token counts. EngineSpec replays the full top-50
-    * driver-side, value-for-value. */
-  val x161WeightedReservoir: Q = (s, d) => {
-    val keyed = Tables.documents(s, d)
-      .select(col("doc_id"), tokenCount(col("text")).cast("long").as("n_tok"),
-        graft.dedup.NearDup.md5Hash32(col("doc_id").cast("string")).as("h"))
-      .withColumn("key_q",
-        round(log((col("h").cast("double") + 1.0) / 4294967296.0)
-          / col("n_tok").cast("double") * 1e6, 0).cast("long"))
-    keyed.orderBy(col("key_q").desc, col("doc_id")).limit(50)
-      .withColumn("rk", row_number().over(
-        Window.orderBy(col("key_q").desc, col("doc_id"))).cast("long"))
-      .select(col("rk"), col("doc_id"), col("n_tok"),
-        (col("key_q").cast("double") / 1e6).as("aes_key"))
-      .orderBy(col("rk"))
-  }
-
-  /** X162: Neyman optimal stratified allocation (Neyman 1934;
-    * Cochran's standard form n_h ∝ N_h·σ_h) — the sampling DESIGN
-    * member of the sampling family (x16 executes a stratified sample,
-    * x61/x161 draw; this decides HOW MANY per stratum): given a 1000-
-    * doc audit budget, allocate to sources proportional to size ×
-    * quality-score spread — high-variance sources need more
-    * inspection per the published variance-minimizing rule. Per-
-    * source σ is the population std of the 1e-4-integer quality
-    * score (exact integer variance, one sqrt seam quantized after
-    * evaluation — the x157 recipe); the allocation lands on the
-    * budget EXACTLY via largest-remainder rounding on exact integer
-    * rationals (floor quotas + top remainders, ties by source — the
-    * x141 integer-allocation discipline; Σ alloc = 1000 pinned).
-    * Scale shape: one corpus scan onto |sources| rows; everything
-    * after is arithmetic on that tiny relation. */
-  val x162NeymanAlloc: Q = (s, d) => {
-    val st = Tables.documents(s, d)
-      .select(col("source"),
-        round(qualityScore(col("text"), stopwords) * 1e4, 0).cast("long")
-          .as("q4"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n"), sum(col("q4")).as("sq"),
-        sum(col("q4") * col("q4")).as("sqq"))
-      .select(col("source"), col("n"),
-        round(sqrt((col("n") * col("sqq") - col("sq") * col("sq"))
-          .cast("double")) / col("n").cast("double"), 0).cast("long")
-          .as("sd4"))
-      .withColumn("a", col("n") * col("sd4"))
-      // pinned once: the |sources|-row stat table feeds FOUR consumers
-      // (total, quotas, the budget remainder, the output) — without
-      // the pin the corpus scan re-runs per consumer (x131 precedent)
-      .localCheckpoint()
-    val tot = st.agg(sum(col("a")).as("s_tot"))
-    val base = st.crossJoin(broadcast(tot))
-      .withColumn("base", call_function("div", lit(1000L) * col("a"),
-        col("s_tot")))
-      .withColumn("rem", pmod(lit(1000L) * col("a"), col("s_tot")))
-    val kdf = base.agg((lit(1000L) - sum(col("base"))).as("k"))
-    base.crossJoin(broadcast(kdf))
-      .withColumn("rn", row_number().over(
-        Window.orderBy(col("rem").desc, col("source"))).cast("long"))
-      .select(col("source"), col("n").as("n_docs"),
-        (col("sd4").cast("double") / 1e4).as("sd_quality"),
-        (intRoundHalfAway(col("a") * 10000L, col("s_tot")).cast("double")
-          / 1e4).as("weight"),
-        (col("base") + when(col("rn") <= col("k"), 1L).otherwise(0L))
-          .as("alloc"))
-      .orderBy(col("source"))
-  }
-
-  /** X151: Good-Turing frequency re-estimation (Good 1953; Gale &
-    * Sampson 1995's presentation) — the unseen-mass measurement the
-    * engine's discount families (x64 backoff, x83 Kneser-Ney) are
-    * calibrated against: from the frequency-of-frequencies table
-    * N_r, the Turing estimate r* = (r+1)·N_{r+1}/N_r and the
-    * probability mass GT assigns each count class,
-    * mass(r) = (r+1)·N_{r+1}/N — one formula that at r = 0 IS the
-    * unseen-token mass P₀ = N₁/N. Every quantity is an exact integer
-    * rational ([[intRoundHalfAway]] at presentation). Honesty note:
-    * the raw Turing estimator degenerates where the FoF tail has gaps
-    * (N_{r+1} = 0 ⇒ r* = 0) — the exact defect Gale & Sampson's
-    * log-linear smoothing exists to fix; what this operator ships is
-    * the smoother's INPUT table plus the raw estimates, which on the
-    * contiguous low-r head (the region LM discounts actually read)
-    * are the estimator of record. EngineSpec pins the exact census
-    * identity Σ r·N_r = N, P₀ = N₁/N, the r* replay, and the partial
-    * telescope Σ_{r<R} mass(r) = (Σ_{r'≤R} r'·N_{r'})/N over the
-    * gapless head ending at the first empty class R. Scale shape:
-    * one corpus scan
-    * into the vocabulary count table (map-side combinable), then the
-    * FoF histogram is DOUBLY bounded (≲ 2√N distinct r values — the
-    * classic FoF tail bound); everything after is row-local on that
-    * tiny relation plus a self-join shifted by one. */
-  val x151GoodTuring: Q = (s, d) => {
-    val cnt = Tables.documents(s, d)
-      .select(explode(wsTokens(col("text"))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("c"))
-    val fof = cnt.groupBy(col("c").as("r")).agg(count(lit(1)).as("n_r"))
-      .localCheckpoint()
-    val tot = fof.agg(sum(col("r") * col("n_r")).as("n"))
-    val withZero = fof.unionByName(
-      s.range(1).select(lit(0L).as("r"), lit(0L).as("n_r")))
-    val nxt = fof.select((col("r") - 1L).as("r"), col("n_r").as("n_next"))
-    withZero.join(nxt, Seq("r"), "left").crossJoin(broadcast(tot))
-      .select(col("r"), col("n_r"),
-        when(col("n_r") > 0 && col("n_next").isNotNull,
-          intRoundHalfAway((col("r") + 1L) * col("n_next") * 10000L,
-            col("n_r")).cast("double") / 1e4).as("r_star"),
-        (intRoundHalfAway(
-          (col("r") + 1L) * coalesce(col("n_next"), lit(0L)) * 1000000L,
-          col("n")).cast("double") / 1e6).as("gt_mass"))
-      .orderBy(col("r"))
-  }
-
-  /** x169's register coordinates — shared verbatim by the streaming
-    * half ([[graft.streaming.DocStream.windowedHllRegisters]]), the
-    * x102-CMS convention: register j = the md5₃₂ hash's top 6 bits
-    * (m = 64 registers); rank ρ = leading zeros of the remaining
-    * 26 bits + 1 (an all-zero remainder ranks 27). Pure integer: the
-    * leading-zero count rides `length(bin(r))`, identical in both
-    * engines (no leading zeros, bin(0) = "0"). */
-  private[graft] def hllJ(w: Column): Column =
-    call_function("div", graft.dedup.NearDup.md5Hash32(w), lit(67108864L))
-
-  private[graft] def hllRho(w: Column): Column = {
-    val r = pmod(graft.dedup.NearDup.md5Hash32(w), lit(67108864L))
-    when(r === 0L, lit(27L))
-      .otherwise(lit(27L) - length(bin(r)).cast("long"))
-  }
-
-  /** X169: HyperLogLog distinct sketch (Flajolet et al. 2007; the
-    * m = 64 register-max form) — x160's KMV sibling and the industry
-    * standard BECAUSE sketches MERGE: union of slices ≡ register-wise
-    * max, the property that lets per-window/per-shard sketches roll
-    * up without rescanning (pinned stream≡batch + merge law in
-    * StreamingSpec via [[graft.streaming.DocStream
-    * .windowedHllRegisters]]). Per source: exact distinct tokens, the
-    * HLL estimate, and the relative error. Estimator determinism: the
-    * register power sum Σ 2^(27−M_j) is an EXACT integer (a 28-entry
-    * literal power table indexed by register value — no float pow,
-    * no shift builtin), leaving exactly one double seam — the raw
-    * estimate α₆₄·m²·2²⁷/S (and LN(m/V) on the small-range linear-
-    * counting branch, Flajolet's published correction for E ≤ 2.5m
-    * with empty registers) — quantized 1e-4 after evaluation (x39
-    * rule); the branch predicate compares already-quantized integers.
-    * Scale shape: one scan onto (source, j ≤ 64) registers — map-side
-    * combinable max — plus the exact-distinct baseline for the error
-    * column (the sketch's own cost is 64 longs per source,
-    * constant-state at any corpus size; the exact count exists only
-    * to grade it). */
-  val x169HllDistinct: Q = (s, d) => {
-    val tok = Tables.documents(s, d)
-      .select(col("source"), explode(wsTokens(col("text"))).as("w"))
-      .distinct()
-    val regs = tok
-      .select(col("source"), hllJ(col("w")).as("j"),
-        hllRho(col("w")).as("rho"))
-      .groupBy(col("source"), col("j")).agg(max(col("rho")).as("m"))
-    val powArr = array((0 to 27).map(m => lit(1L << (27 - m))): _*)
-    val full = tok.select(col("source")).distinct()
-      .crossJoin(broadcast(s.range(0, 64).select(col("id").as("j"))))
-      .join(regs, Seq("source", "j"), "left")
-      .withColumn("m0", coalesce(col("m"), lit(0L)))
-    val st = full.groupBy(col("source"))
-      .agg(sum(element_at(powArr, (col("m0") + 1L).cast("int"))).as("ssum"),
-        sum(when(col("m0") === 0L, 1L).otherwise(0L)).as("v"))
-    val ex = tok.groupBy(col("source"))
-      .agg(count(lit(1)).as("n_exact"))
-    ex.join(st, Seq("source"))
-      .withColumn("raw_q", round(lit(0.709) * lit(4096.0)
-        * lit(134217728.0) / col("ssum").cast("double") * 1e4, 0)
-        .cast("long"))
-      .withColumn("lc_branch",
-        col("v") > 0L && col("raw_q") <= 1600000L)
-      .withColumn("est_q", when(col("lc_branch"),
-          round(lit(64.0) * log(lit(64.0) / col("v").cast("double"))
-            * 1e4, 0).cast("long"))
-        .otherwise(col("raw_q")))
-      .select(col("source"), col("n_exact"), col("v").as("n_zero_regs"),
-        col("lc_branch"),
-        (col("est_q").cast("double") / 1e4).as("hll_estimate"),
-        (intRoundHalfAway(abs(col("est_q") - col("n_exact") * 10000L),
-          col("n_exact")).cast("double") / 1e4).as("rel_err"))
-      .orderBy(col("source"))
-  }
-
-  /** X157: dataset cartography (Swayamdipta et al. 2020, "Dataset
-    * cartography: mapping and diagnosing datasets with training
-    * dynamics") — the one consumer of a training TRAJECTORY rather
-    * than a final model: score every doc's true-label probability
-    * under each of the 20 persisted GD snapshots
-    * ([[ensureClfTrajectory]] — the same trainer run as the registry,
-    * snapshots kept), then per doc confidence = mean over steps and
-    * variability = population std; the (conf, var) map splits the
-    * corpus into easy-to-learn (high conf, low var — prunable, cf.
-    * x150), hard-to-learn (low conf, low var — the label-noise
-    * region x142 flags), and ambiguous (high var — the examples
-    * worth keeping). Per (region, label) rollup. Determinism: probs
-    * are the trainer's own 1e-6-quantized σ; mean is an exact
-    * integer rational; std's one sqrt seam is quantized after
-    * evaluation on an exact-integer argument (k·Σp² − (Σp)²). Scale
-    * shape (r11): ONE dense-feature scan × the 1-row broadcast
-    * snapshot array — all 20 logits, σs and their moments fold
-    * row-locally, so the only shuffle is the ≤8-row region rollup. */
-  val x157Cartography: Q = (s, d) => {
-    val traj = s.read.parquet(ensureClfTrajectory(s, d))
-    val (tf, _) = qualityClfTf(s, d)
-    // task-side compiled fold (r12, guide §1.2 — [[trajPqRows]]): all
-    // 20 per-step logits, σs and their moments are computed inside the
-    // task in one pass, same integers as the former interpreted
-    // zip_with/aggregate column folds; no bucket-join, no doc-keyed
-    // shuffle — the only shuffle left is the ≤8-row region rollup.
-    import s.implicits._
-    val perDoc = trajPqRows(tf, traj).map { case (docId, y, _, pqs) =>
-      val k = pqs.length.toLong
-      var sp = 0L; var spp = 0L
-      var i = 0
-      while (i < pqs.length) {
-        val ptq = if (y == 1L) pqs(i) else 1000000L - pqs(i)
-        sp += ptq; spp += ptq * ptq; i += 1
-      }
-      (docId, y, intRoundHalfAwayL(sp, k),
-        rndQ(math.sqrt((k * spp - sp * sp).toDouble) / k.toDouble))
-    }.toDF("doc_id", "y", "conf_q", "vari_q")
-    perDoc
-      .withColumn("region",
-        when(col("vari_q") >= 100000L, "ambiguous")
-          .when(col("conf_q") >= 700000L, "easy_to_learn")
-          .when(col("conf_q") <= 300000L, "hard_to_learn")
-          .otherwise("middle"))
-      .groupBy(col("region"), col("y"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("conf_q")).as("sc"), sum(col("vari_q")).as("sv"))
-      .select(col("region"), col("y"), col("n_docs"),
-        (intRoundHalfAway(col("sc"), col("n_docs")).cast("double") / 1e6)
-          .as("mean_conf"),
-        (intRoundHalfAway(col("sv"), col("n_docs")).cast("double") / 1e6)
-          .as("mean_vari"))
-      .orderBy(col("region"), col("y"))
-  }
-
-  /** X158: forgetting events (Toneva et al. 2019, "An empirical study
-    * of example forgetting during deep neural network learning") —
-    * x157's trajectory read along the TIME axis: a doc is correct at
-    * step t when its true-label probability clears 0.5, and a
-    * forgetting event is a correct→incorrect transition between
-    * consecutive snapshots. The paper's operational finding:
-    * never-forgotten examples are safely prunable, high-forget
-    * examples carry the signal (and mislabeled data forgets
-    * chronically) — the trajectory-native complement of x150's
-    * final-state EL2N cut. Per label: never-learned docs (no correct
-    * step — x142's noise region), unforgettable docs (learned, zero
-    * forgets), forgotten-at-least-once mass, mean and max forget
-    * counts. All-integer off the trainer's own quantized σ; the
-    * step scan folds over one step-ordered array inside the row
-    * (r11 — bounded, never corpus-wide, no window exchange). */
-  val x158ForgettingEvents: Q = (s, d) => {
-    val traj = s.read.parquet(ensureClfTrajectory(s, d))
-    val (tf, _) = qualityClfTf(s, d)
-    // task-side trajectory walk (r12, guide §1.2 — [[trajPqRows]]):
-    // the per-step oks and the correct→incorrect transition scan run
-    // inside the task in one pass, same integers as the former
-    // interpreted column folds; no bucket-join, no per-doc window —
-    // only the ≤2-row label rollup shuffles.
-    import s.implicits._
-    val perDoc = trajPqRows(tf, traj).map { case (docId, y, _, pqs) =>
-      var nOk = 0L; var forgets = 0L; var prevOk = false
-      var i = 0
-      while (i < pqs.length) {
-        val ptq = if (y == 1L) pqs(i) else 1000000L - pqs(i)
-        val ok = ptq >= 500000L
-        if (ok) nOk += 1L
-        if (i >= 1 && prevOk && !ok) forgets += 1L
-        prevOk = ok; i += 1
-      }
-      (docId, y, nOk, forgets)
-    }.toDF("doc_id", "y", "n_ok", "forgets")
-    perDoc.groupBy(col("y"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("n_ok") === 0L, 1L).otherwise(0L))
-          .as("n_never_learned"),
-        sum(when(col("n_ok") > 0L && col("forgets") === 0L, 1L)
-          .otherwise(0L)).as("n_unforgettable"),
-        sum(when(col("forgets") > 0L, 1L).otherwise(0L))
-          .as("n_forgotten"),
-        sum(col("forgets")).as("sf"),
-        max(col("forgets")).as("max_forgets"))
-      .select(col("y"), col("n_docs"), col("n_never_learned"),
-        col("n_unforgettable"), col("n_forgotten"),
-        (intRoundHalfAway(col("sf") * 10000L, col("n_docs"))
-          .cast("double") / 1e4).as("mean_forgets"),
-        col("max_forgets"))
-      .orderBy(col("y"))
-  }
-
-  /** X168: curriculum schedule from training dynamics — the artifact
-    * a trainer actually CONSUMES from the trajectory family: x157
-    * labels regions and x158 counts forgets, but neither emits a
-    * run-order; this does. Per doc (ONE x157-shaped 20-snapshot
-    * scoring join): confidence, variability, and the x158 learned-
-    * at-least-once count. Stages follow the cartography curriculum
-    * (Swayamdipta et al. 2020 §6): stage 1 = easy-to-learn (warmup),
-    * stage 2 = middle + ambiguous (the high-value core — "ambiguous
-    * contributes the most"), stage 3 = hard-but-learned (polish);
-    * never-learned docs (no correct step, x158's noise region) are
-    * DROPPED — reported as stage 0 with alloc 0, never silently. The
-    * token budget (half the kept mass, the x141 convention) lands on
-    * the (stage, region) cells proportional to token mass by exact
-    * largest-remainder (x162's recipe: floor quotas + top remainders,
-    * ties by (stage, region); Σ alloc = B EXACTLY, pinned in
-    * EngineSpec). Scale shape: x157's row-local trajectory scoring
-    * (r11) + one corpus token scan, collapsing onto ≤ 5 (stage,
-    * region) cells; the
-    * landing runs on that pinned tiny relation (b·n_tok stays in
-    * Int64 up to ~10⁹-token corpora; production id widths promote the
-    * quota products to decimal(38,0) — the Opq precedent). */
-  val x168CurriculumSchedule: Q = (s, d) => {
-    val traj = s.read.parquet(ensureClfTrajectory(s, d))
-    val (tf, _) = qualityClfTf(s, d)
-    // task-side x157-shaped scoring (r12, guide §1.2 —
-    // [[trajPqRows]]): moments and the learned-at-least-once count
-    // fold inside the task in one pass, same integers as the former
-    // interpreted column folds; no bucket-join, no doc-keyed shuffle.
-    import s.implicits._
-    val perDoc = trajPqRows(tf, traj).map { case (docId, y, _, pqs) =>
-      val k = pqs.length.toLong
-      var sp = 0L; var spp = 0L; var nOk = 0L
-      var i = 0
-      while (i < pqs.length) {
-        val ptq = if (y == 1L) pqs(i) else 1000000L - pqs(i)
-        sp += ptq; spp += ptq * ptq
-        if (ptq >= 500000L) nOk += 1L
-        i += 1
-      }
-      (docId, intRoundHalfAwayL(sp, k),
-        rndQ(math.sqrt((k * spp - sp * sp).toDouble) / k.toDouble), nOk)
-    }.toDF("doc_id", "conf_q", "vari_q", "n_ok")
-    val staged = perDoc
-      .withColumn("region",
-        when(col("vari_q") >= 100000L, "ambiguous")
-          .when(col("conf_q") >= 700000L, "easy_to_learn")
-          .when(col("conf_q") <= 300000L, "hard_to_learn")
-          .otherwise("middle"))
-      .withColumn("stage",
-        when(col("n_ok") === 0L, 0L)
-          .when(col("region") === "easy_to_learn", 1L)
-          .when(col("region") === "middle"
-            || col("region") === "ambiguous", 2L)
-          .otherwise(3L))
-    val nt = Tables.documents(s, d)
-      .select(col("doc_id"), tokenCount(col("text")).cast("long").as("t"))
-    // pinned once: the cell table feeds the budget total, the quotas,
-    // and the remainder landing (the x162 stat-table lesson)
-    val cell = staged.join(nt, Seq("doc_id"))
-      .groupBy(col("stage"), col("region"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("t")).as("n_tok"))
-      .localCheckpoint()
-    val tot = cell.agg(
-      call_function("div",
-        sum(when(col("stage") >= 1L, col("n_tok")).otherwise(0L)),
-        lit(2L)).as("b"),
-      sum(when(col("stage") >= 1L, col("n_tok")).otherwise(0L)).as("kt"))
-    val base = cell.crossJoin(broadcast(tot))
-      .withColumn("basq", when(col("stage") >= 1L,
-        call_function("div", col("b") * col("n_tok"), col("kt")))
-        .otherwise(0L))
-      .withColumn("rem", when(col("stage") >= 1L,
-        pmod(col("b") * col("n_tok"), col("kt"))).otherwise(-1L))
-    val kdf = base.agg((max(col("b")) - sum(col("basq"))).as("kk"))
-    base.crossJoin(broadcast(kdf))
-      .withColumn("rn", row_number().over(
-        Window.orderBy(col("rem").desc, col("stage"), col("region")))
-        .cast("long"))
-      .select(col("stage"), col("region"), col("n_docs"), col("n_tok"),
-        (col("basq") + when(col("rem") >= 0L && col("rn") <= col("kk"),
-          1L).otherwise(0L)).as("alloc"))
-      .orderBy(col("stage"), col("region"))
-  }
-
-  /** X159: TracIn self-influence (Pruthi et al. 2020, "Estimating
-    * training data influence by tracing gradient descent") — the
-    * trajectory trio's third member (x157 maps, x158 counts, this
-    * RANKS): self-influence = Σ_t η·‖∇loss_t(doc)‖², which for the
-    * logistic trainer is η·Σ_t (p_t − y)²·‖x‖² — the published
-    * mislabeled/outlier detector (chronically-wrong examples with
-    * big feature mass accumulate the largest self-gradient). Top-20
-    * by (si DESC, doc_id) via TakeOrdered — the audit queue a
-    * labeling team actually works. Determinism: p_t is the trainer's
-    * own 1e-6-quantized σ per snapshot; ‖x‖² is an order-free
-    * integer sum of 1e-6-quantized squares; the Σ(p−y)² mass is
-    * re-quantized to 1e-6 before the product so everything stays in
-    * BIGINT range (two-stage quantization, replayed identically by
-    * the oracle). One dense-feature scan with all 20 snapshot scores
-    * and the feature mass folded row-locally (r11 — x157's shape);
-    * nothing pairwise. */
-  val x159TracinSelf: Q = (s, d) => {
-    val traj = s.read.parquet(ensureClfTrajectory(s, d))
-    val (tf, _) = qualityClfTf(s, d)
-    // task-side (r12, guide §1.2 — [[trajPqRows]]): per-step dq² mass
-    // and the feature-mass ‖x‖² fold inside the task in one pass,
-    // same integers as the former interpreted column folds — the
-    // bucket-join, the doc-keyed re-aggregation AND the aMass⋈xsq
-    // join stay gone; only TakeOrdered(20) remains.
-    import s.implicits._
-    trajPqRows(tf, traj).map { case (docId, y, xs, pqs) =>
-      var a = 0L
-      var i = 0
-      while (i < pqs.length) {
-        val dq = pqs(i) - y * 1000000L
-        a += dq * dq; i += 1
-      }
-      val a6 = intRoundHalfAwayL(a, 1000000L)
-      var b6 = 0L
-      var b = 0
-      while (b < xs.length) { b6 += rndQ(xs(b) * xs(b) * 1e6); b += 1 }
-      (docId, y, intRoundHalfAwayL(16L * a6 * b6, 1000000L))
-    }.toDF("doc_id", "y", "si_q")
-      .orderBy(col("si_q").desc, col("doc_id")).limit(20)
-      .withColumn("rk", row_number().over(
-        Window.orderBy(col("si_q").desc, col("doc_id"))).cast("long"))
-      .select(col("rk"), col("doc_id"), col("y"),
-        (col("si_q").cast("double") / 1e6).as("self_influence"))
-      .orderBy(col("rk"))
-  }
-
-  /** X163: Cohen's kappa (Cohen 1960) between the rule gate and the
-    * trained classifier — the chance-corrected member of the
-    * evaluation family (x122 reports raw agreement, x138 ROC, x118/
-    * x136 calibration, x142 noise): on a source whose labels are 95%
-    * one class, 95% raw agreement is CHANCE, and kappa is the number
-    * that says so — κ = (p_o − p_e)/(1 − p_e) with p_e the marginal-
-    * product chance rate. Everything is an exact integer rational of
-    * four counts per source (n, agreements, rater-1 positives,
-    * rater-2 positives); κ is NULL when both raters are constant
-    * (p_e = 1 leaves it undefined — the documented degenerate case).
-    * One registry-scoring scan onto |sources| rows. */
-  val x163CohenKappa: Q = (s, d) => {
-    val wdf = s.read.parquet(ensureClfWeights(s, d))
-    val tf = clfTf1(s, d)
-    val ct = clfScores(tf, wdf)
-      .join(Tables.documents(s, d).select(col("doc_id"), col("source")),
-        Seq("doc_id"))
-      .select(col("source"), col("y"),
-        (col("pq") >= 500000L).cast("long").as("yhat"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("y") === col("yhat"), 1L).otherwise(0L)).as("agree"),
-        sum(col("y")).as("p1"), sum(col("yhat")).as("p2"))
-    val chance = col("p1") * col("p2") +
-      (col("n") - col("p1")) * (col("n") - col("p2"))
-    ct.select(col("source"), col("n").as("n_docs"),
-        (intRoundHalfAway(col("agree") * 10000L, col("n"))
-          .cast("double") / 1e4).as("po"),
-        (intRoundHalfAway(chance * 10000L, col("n") * col("n"))
-          .cast("double") / 1e4).as("pe"),
-        when(col("n") * col("n") =!= chance,
-          intRoundHalfAway((col("n") * col("agree") - chance) * 10000L,
-            col("n") * col("n") - chance).cast("double") / 1e4)
-          .as("kappa"))
-      .orderBy(col("source"))
-  }
-
-  /** X164: Wilson score lower bound (Wilson 1927; the small-sample-
-    * corrected ranking rule) on per-source classifier keep rates —
-    * the monitoring fix for x122's raw keep_rate: a 3-doc source at
-    * 3/3 kept outranks a 1000-doc source at 96% under the naive
-    * share, and the Wilson 95% lower bound is the standard one-line
-    * correction (rank by what the rate is AT LEAST, with confidence).
-    * One registry-scoring scan onto |sources| rows; the bound is one
-    * fixed-op-order double expression (z = 1.96) quantized 4dp after
-    * evaluation (x39 rule), everything else exact counts. EngineSpec
-    * replays every bound and pins lb ≤ p̂ (the correction only ever
-    * shrinks) plus the small-sample demotion it exists for. */
-  val x164WilsonBound: Q = (s, d) => {
-    val wdf = s.read.parquet(ensureClfWeights(s, d))
-    val tf = clfTf1(s, d)
-    val ct = clfScores(tf, wdf)
-      .join(Tables.documents(s, d).select(col("doc_id"), col("source")),
-        Seq("doc_id"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("pq") >= 500000L, 1L).otherwise(0L)).as("k"))
-    val nD = col("n").cast("double"); val z2 = lit(3.8416)
-    val ph = col("k").cast("double") / nD
-    val lb = (ph + z2 / (lit(2.0) * nD)
-      - lit(1.96) * sqrt((ph * (lit(1.0) - ph) + z2 / (lit(4.0) * nD)) / nD)) /
-      (lit(1.0) + z2 / nD)
-    ct.select(col("source"), col("n").as("n_docs"), col("k").as("n_kept"),
-        (intRoundHalfAway(col("k") * 10000L, col("n")).cast("double")
-          / 1e4).as("keep_rate"),
-        (round(lb * 1e4, 0).cast("long").cast("double") / 1e4)
-          .as("wilson_lb"))
-      .orderBy(col("source"))
-  }
-
-  /** X165: truncation-loss table — the number x38's length histogram
-    * motivates but never states: at training sequence length L, how
-    * many tokens does each source LOSE to truncation (docs longer
-    * than L drop their tail), and what share of its mass is that —
-    * the table that prices the L ∈ {128, 512, 2048} choice against
-    * x25's packing budget (short L wastes long docs; long L wastes
-    * padding — this is the first half of that trade, exactly). ONE
-    * corpus scan onto |sources| rows × a broadcast 3-row grid;
-    * all-integer (loss = Σ max(n_tok − L, 0)). */
-  val x165TruncationLoss: Q = (s, d) => {
-    val nt = Tables.documents(s, d)
-      .select(col("source"), tokenCount(col("text")).cast("long").as("n_tok"))
-    val grid = s.createDataFrame(Seq(128L, 512L, 2048L).map(Tuple1(_)))
-      .toDF("seq_len")
-    nt.crossJoin(broadcast(grid))
-      .groupBy(col("source"), col("seq_len"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("n_tok") > col("seq_len"), 1L).otherwise(0L))
-          .as("n_truncated"),
-        sum(col("n_tok")).as("n_tok"),
-        sum(greatest(col("n_tok") - col("seq_len"), lit(0L)))
-          .as("tok_lost"))
-      .select(col("source"), col("seq_len"), col("n_docs"),
-        col("n_truncated"), col("n_tok"), col("tok_lost"),
-        (intRoundHalfAway(col("tok_lost") * 10000L, col("n_tok"))
-          .cast("double") / 1e4).as("loss_share"))
-      .orderBy(col("source"), col("seq_len"))
-  }
-
-  /** x166's per-domain EXCESS LOSS table: for every source, the mean
-    * held-out per-token NLL under the weak PROXY model (add-one
-    * unigram) minus under the stronger REFERENCE model (add-one
-    * bigram, x149's reference recipe), both trained on the md5-balde
-    * train split (< 90) and evaluated on the held-out split (≥ 90) —
-    * never on their own training text (the [[rholossRedQ]]
-    * self-memorization lesson). excess = max(0, ℓ_proxy − ℓ_ref) in
-    * integer 1e-4 nats: the headroom training can still buy on that
-    * domain, DoReMi's per-domain reward signal. Inner semantics: a
-    * domain needs ≥ 1 held-out bigram (every fixture source has
-    * thousands). Shape: the x64/x149 gram-table joins — two
-    * map-side-combinable gram aggregations on the train slice, two
-    * held-out scoring scans, all collapsing onto |sources| rows. */
-  private[graft] def doremiExcessQ(docs: DataFrame): DataFrame = {
-    val balde = pmod(
-      conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long"), lit(100L))
-    val tr = docs.filter(balde < 90)
-      .select(wsTokens(col("text")).as("toks"))
-    val ho = docs.filter(balde >= 90).select(col("source"), col("text"))
-    val uni = tr.select(explode(col("toks")).as("w1"))
-      .groupBy(col("w1")).agg(count(lit(1)).as("c1"))
-    val scal = uni.agg(sum(col("c1")).as("nn"),
-      (count(lit(1)) + 1L).as("v"))
-    val cnt2 = tr.select(explode(allShinglesOfToks(col("toks"), 2)).as("g"))
-      .groupBy(col("g")).agg(count(lit(1)).as("c2"))
-    val eu = ho.select(col("source"), explode(wsTokens(col("text"))).as("w1"))
-      .join(uni, Seq("w1"), "left").crossJoin(broadcast(scal))
-      .withColumn("lp", round(-log(
-          (coalesce(col("c1"), lit(0L)).cast("double") + 1.0) /
-          (col("nn") + col("v")).cast("double")) * 1e4, 0).cast("long"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("nu"), sum(col("lp")).as("su"))
-      .select(col("source"), intRoundHalfAway(col("su"), col("nu"))
-        .as("ell_uni_q"))
-    val eb = ho.select(col("source"), wsTokens(col("text")).as("toks"))
-      .select(col("source"),
-        explode(allShinglesOfToks(col("toks"), 2)).as("g"))
-      .withColumn("w1", substring_index(col("g"), " ", 1))
-      .join(cnt2, Seq("g"), "left").join(uni, Seq("w1"), "left")
-      .crossJoin(broadcast(scal))
-      .withColumn("lp", round(-log(
-          (coalesce(col("c2"), lit(0L)).cast("double") + 1.0) /
-          (coalesce(col("c1"), lit(0L)).cast("double")
-            + col("v").cast("double"))) * 1e4, 0).cast("long"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("nb"), sum(col("lp")).as("sb"))
-      .select(col("source"), intRoundHalfAway(col("sb"), col("nb"))
-        .as("ell_bi_q"))
-    eu.join(eb, Seq("source"))
-      .select(col("source"), col("ell_uni_q"), col("ell_bi_q"),
-        greatest(col("ell_uni_q") - col("ell_bi_q"), lit(0L))
-          .as("excess_q"))
-  }
-
-  /** Largest-remainder landing of the rationals vals_i/den onto the
-    * `grid` simplex (Σ out = grid EXACTLY): floor quotas + one unit to
-    * the top-(grid − Σfloor) remainders, ties by source ascending —
-    * the x141/x162 integer-allocation discipline, here as a reusable
-    * step for [[doremiWeights]]'s per-iteration renormalization. All
-    * arithmetic BigInt: the step numerators reach ~10²¹ (99·S·α·w·10⁶)
-    * — past Int64, exactly the Opq round-9 hazard — so the oracle twin
-    * runs on HUGEINT. */
-  private def doremiLand(vals: Seq[(String, BigInt)], den: BigInt,
-      grid: Long): Seq[(String, Long)] = {
-    val base = vals.map { case (src, v) =>
-      (src, (v * grid / den).toLong, v * grid % den) }
-    val k = grid - base.map(_._2).sum
-    val bump = base.sortBy { case (src, _, r) => (r, src) }(
-        Ordering.Tuple2(Ordering[BigInt].reverse, Ordering[String]))
-      .take(k.toInt).map(_._1).toSet
-    base.map { case (src, b, _) => (src, b + (if (bump(src)) 1L else 0L)) }
-  }
-
-  /** x166's multiplicative-weights loop (exposed for the EngineSpec
-    * crafted-corpus pin): from the exact uniform landing α⁰, `iters`
-    * DoReMi steps α ← normalize(α·exp(η·excess)) smoothed with the
-    * published c = 1/100 uniform mixture — the smoothed target weight
-    * is the EXACT rational (99·S·α_s·w_s + Σα·w) / (100·S·Σα·w), so
-    * normalize-and-smooth is ONE largest-remainder landing per step
-    * and every iterate sits on the 10⁶ simplex exactly. The per-domain
-    * multiplier w_s = round(exp(η·excess_s)·10⁶) is the loop's single
-    * transcendental, quantized AFTER evaluation once per domain (x39
-    * rule; [[graft.ml.LogFit.qScaled]] for the engine-shared HALF_UP).
-    * Returns every iterate plus DoReMi's published output — the
-    * per-step AVERAGE weight vector, landed back on the simplex.
-    * Driver-side on the |domains|-row vector by design (the
-    * m1-knotScan pattern: per-iteration Spark jobs over ≤ 10 rows are
-    * pure scheduling overhead); the corpus-sized work all lives in
-    * [[doremiExcessQ]]. */
-  private[graft] def doremiWeights(ex: Seq[(String, Long)],
-      eta: Double = 0.1, iters: Int = 10)
-      : (Seq[Seq[(String, Long)]], Seq[(String, Long)]) = {
-    val srcs = ex.map(_._1)
-    val sN = BigInt(srcs.size)
-    val wq = ex.map { case (src, e) =>
-      src -> BigInt(graft.ml.LogFit.qScaled(
-        math.exp(eta * e.toDouble / 1e4), 1e6)) }.toMap
-    var alpha = doremiLand(srcs.map(s => (s, BigInt(1))), sN, 1000000L)
-    val steps = (1 to iters).map { _ =>
-      val m = alpha.map { case (src, a) => (src, BigInt(a) * wq(src)) }
-      val sm = m.map(_._2).sum
-      val n = m.map { case (src, v) => (src, BigInt(99) * sN * v + sm) }
-      alpha = doremiLand(n, BigInt(100) * sN * sm, 1000000L)
-      alpha
-    }
-    val acc = srcs.map(src =>
-      (src, steps.map(st => BigInt(st.toMap.apply(src))).sum))
-    // mean over steps: Σacc = iters·10⁶, so acc/iters already sums to
-    // the grid — den = iters·grid makes doremiLand's v·grid/den reduce
-    // to exactly acc/iters (the oracle's a // 10)
-    (steps, doremiLand(acc, BigInt(iters) * 1000000L, 1000000L))
-  }
-
-  /** X166: DoReMi domain reweighting (Xie et al. 2023, "DoReMi:
-    * optimizing data mixtures speeds up language model pretraining")
-    * — the EXCESS-LOSS member of the mixture family: x27/x50/x141
-    * weight domains by counts, x42/x133 by importance ratios; DoReMi
-    * weights them by how much a domain's loss under the training
-    * proxy still exceeds what a stronger reference model achieves —
-    * domains with headroom get data, already-easy and noise domains
-    * lose it (the published method behind production mixture tuning).
-    * This engine's instantiation: proxy = add-one unigram, reference
-    * = add-one bigram, both held-out-evaluated ([[doremiExcessQ]]);
-    * 10 multiplicative-weight steps with exp-quantized multipliers
-    * and exact largest-remainder renormalize-and-smooth
-    * ([[doremiWeights]] — every iterate AND the final per-step
-    * average sum to 10⁶ exactly, pinned in EngineSpec along with
-    * high-excess-gains-weight on a crafted skewed corpus). Output:
-    * per domain, both held-out losses, the excess, and the DoReMi
-    * weight. Scale shape: one train-slice gram build + one held-out
-    * scoring pass onto |domains| rows; the loop is driver-side
-    * arithmetic on that vector (data-volume free). Oracle: the same
-    * gram NLLs + all 10 steps unrolled on HUGEINT. */
-  val x166DoremiWeights: Q = (s, d) => {
-    val ex = doremiExcessQ(Tables.documents(s, d))
-      .orderBy(col("source")).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getLong(3))).toSeq
-    val (_, fin) = doremiWeights(ex.map(t => (t._1, t._4)))
-    val fm = fin.toMap
-    s.createDataFrame(ex.map { case (src, eu, eb, e) =>
-        (src, eu.toDouble / 1e4, eb.toDouble / 1e4, e.toDouble / 1e4,
-          fm(src).toDouble / 1e6) })
-      .toDF("source", "ell_proxy", "ell_ref", "excess", "weight")
-      .orderBy(col("source"))
-  }
-
-  /** X167: tokenizer selection audit — the engine trains all three
-    * published subword tokenizers (BPE x106, WordPiece x145, unigram
-    * x117/x135) but until now nothing COMPARED them; this is the
-    * table a data-pipeline owner actually decides on. All three train
-    * on the md5-balde train split (< 90: BPE/WordPiece = 50 merges
-    * over the top-1024 vocabulary, unigram = the full 1-4-char piece
-    * inventory) and are measured on the HELD-OUT split (≥ 90), over
-    * word occurrences ≤ [[ViterbiMaxW]] chars (the x117 dictionary
-    * contract, applied to every tokenizer so the denominators are
-    * identical). Per tokenizer: OOV rate (occurrences the learned
-    * inventory cannot represent — BPE/WordPiece are char-open, so 0
-    * by construction; unigram's closed piece inventory is not),
-    * fertility = subtokens per covered word, compression = chars per
-    * subtoken, and the fully-merged single-token rate — fertility and
-    * compression computed over COVERED occurrences only so the three
-    * rows compare like for like. Scale shape: one train scan (vocab +
-    * piece inventory), one held-out counting scan, three vocabulary-
-    * sized dictionaries broadcast-joined back to the held-out word
-    * counts — the classic tokenizer layout; nothing after the scans
-    * is corpus-sized. Oracle: both merge trainers + the 16-level DP
-    * unrolled on the same split (≈ 500 bounded CTEs). */
-  val x167TokenizerAudit: Q = (s, d) =>
-    tokenizerAuditOn(s, Tables.documents(s, d))
-
-  /** [[x167TokenizerAudit]] core over any (doc_id, source, text) frame
-    * (exposed for the EngineSpec crafted-OOV pin). */
-  private[graft] def tokenizerAuditOn(s: SparkSession,
-      docs: DataFrame): DataFrame = {
-    val balde = pmod(
-      conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long"), lit(100L))
-    val train = docs.filter(balde < 90)
-    // ONE train-split scan (r12, guide §2.4): the same checkpointed
-    // word-frequency table feeds the BPE/WordPiece vocabulary AND the
-    // unigram piece inventory (identical counts — the length cap is a
-    // post-aggregation filter), where each trainer formerly re-scanned
-    // the split.
-    val twf = wordFreq(train).localCheckpoint()
-    val vocab = bpeVocabOf(twf, 1024)
-    val bpeM = graft.text.Bpe.trainOnVocab(vocab, 50)
-      .map(m => (m.lhs, m.rhs))
-    val wpM = graft.text.Bpe.trainWordPieceOnVocab(vocab, 50)
-      .map(m => (m.lhs, m.rhs))
-    val hw = docs.filter(balde >= 90)
-      .select(explode(wsTokens(lower(col("text")))).as("w"))
-      .filter(col("w") =!= "" && length(col("w")) <= ViterbiMaxW)
-      .groupBy(col("w")).agg(count(lit(1)).as("f"))
-      .localCheckpoint()
-    val words = hw.select(col("w"))
-    val bd = graft.text.Bpe.segmentDict(words, bpeM)
-      .select(col("w"), size(col("syms")).cast("long").as("n_bpe"))
-    val wd = graft.text.Bpe.segmentDict(words, wpM)
-      .select(col("w"), size(col("syms")).cast("long").as("n_wp"))
-    val ud = viterbiDictOn(
-      unigramPieceScoresOf(twf.filter(length(col("w")) <= ViterbiMaxW)),
-      words)
-      .select(col("w"), col("np").as("n_uni"))
-    hw.join(broadcast(bd), Seq("w")).join(broadcast(wd), Seq("w"))
-      .join(broadcast(ud), Seq("w"), "left")
-      .withColumn("len", length(col("w")).cast("long"))
-      .select(col("f"), col("len"), explode(array(
-        struct(lit("bpe").as("tok"), col("n_bpe").as("ns")),
-        struct(lit("unigram").as("tok"), col("n_uni").as("ns")),
-        struct(lit("wordpiece").as("tok"), col("n_wp").as("ns")))).as("e"))
-      .select(col("e.tok").as("tokenizer"), col("f"), col("len"),
-        col("e.ns").as("ns"))
-      .groupBy(col("tokenizer"))
-      .agg(sum(col("f")).as("n_words"),
-        sum(when(col("ns").isNull, col("f")).otherwise(0L)).as("n_oov"),
-        sum(when(col("ns").isNotNull, col("f")).otherwise(0L)).as("n_cov"),
-        sum(when(col("ns").isNotNull, col("f") * col("ns")).otherwise(0L))
-          .as("n_subtok"),
-        sum(when(col("ns").isNotNull, col("f") * col("len")).otherwise(0L))
-          .as("n_chars"),
-        sum(when(col("ns") === 1L, col("f")).otherwise(0L)).as("n_single"))
-      .select(col("tokenizer"), col("n_words"), col("n_oov"),
-        (intRoundHalfAway(col("n_oov") * 10000L, col("n_words"))
-          .cast("double") / 1e4).as("oov_rate"),
-        col("n_subtok"),
-        (intRoundHalfAway(col("n_subtok") * 10000L, col("n_cov"))
-          .cast("double") / 1e4).as("fertility"),
-        (intRoundHalfAway(col("n_chars") * 10000L, col("n_subtok"))
-          .cast("double") / 1e4).as("compression"),
-        (intRoundHalfAway(col("n_single") * 10000L, col("n_cov"))
-          .cast("double") / 1e4).as("single_rate"))
-      .orderBy(col("tokenizer"))
-  }
-
-  /** X123: tokenizer vocabulary-size scaling curve — the budget-
-    * pricing table for x106's BPE: per source, fertility under the
-    * FIRST 10, 25, and all 50 learned merges (more merges = bigger
-    * vocab = fewer tokens per word = cheaper training, and this curve
-    * prices exactly that trade). One training run, ONE staged
-    * dictionary replay ([[graft.text.Bpe.segmentDictStaged]] —
-    * snapshots at each depth instead of |stages| full replays, since
-    * merge sequences are prefix-nested by construction), one counting
-    * scan, and a row-local explode unpivots the three stages — the
-    * whole curve costs one x107 plus two snapshot projections.
-    * Early-exhausted training flattens the curve's tail (deeper
-    * stages snapshot the final state), never errors. */
-  val x123BpeScaling: Q = (s, d) => {
-    val merges = trainBpeMerges(s, d).map(m => (m.lhs, m.rhs))
-    val sw = Tables.documents(s, d)
-      .select(col("source"), explode(wsTokens(lower(col("text")))).as("w"))
-      .filter(col("w") =!= "")
-      .groupBy(col("source"), col("w")).agg(count(lit(1)).as("f"))
-    val dict = graft.text.Bpe.segmentDictStaged(
-      sw.select(col("w")).distinct(), merges, Seq(10, 25, 50))
-    sw.join(broadcast(dict), Seq("w"))
-      .groupBy(col("source"))
-      .agg(sum(col("f")).as("n_words"),
-        sum(col("f") * col("ns_10")).as("st10"),
-        sum(col("f") * col("ns_25")).as("st25"),
-        sum(col("f") * col("ns_50")).as("st50"))
-      .select(col("source"), col("n_words"), explode(array(
-        struct(lit(10L).as("k"), col("st10").as("n_subtok")),
-        struct(lit(25L).as("k"), col("st25").as("n_subtok")),
-        struct(lit(50L).as("k"), col("st50").as("n_subtok")))).as("e"))
-      .select(col("source"), col("e.k").as("k"), col("n_words"),
-        col("e.n_subtok").as("n_subtok"),
-        (intRoundHalfAway(col("e.n_subtok") * 10000L, col("n_words"))
-          .cast("double") / 1e4).as("fertility"))
-      .orderBy(col("source"), col("k"))
-  }
-
-  /** X112: cross-document segment dedup with corpus-wide FIRST-
-    * occurrence survivor — RefinedWeb's line dedup proper: x87 drops
-    * a df-heavy segment from EVERY document (boilerplate removal),
-    * this keeps the one occurrence with the lowest (doc_id, segment
-    * index) and drops all later copies (duplicate-content removal —
-    * the first crawl of a syndicated paragraph survives, mirrors
-    * lose it). Segment fingerprints and the 8-token segmenter are
-    * IDENTICAL to x66/x87 (one contract across the whole line-dedup
-    * family). Shape: segment explode (md5 fingerprints + 8-token
-    * segments, never whole docs, cross the wire) → fp-keyed
-    * min_by((doc_id, g)) — map-side combinable, no window over the
-    * corpus → fp join back → doc-keyed deterministic rebuild
-    * (sort_array over collect_list, order restored by segment index).
-    * The same two-shuffle budget as exact dedup at any corpus size;
-    * output carries the x87 clean-text md5 + token-count checksum
-    * convention. */
-  val x112FirstOccDedup: Q = (s, d) =>
-    firstOccDedup(spread(s, Tables.documents(s, d)))
-
-  /** x112 core over any (doc_id, source, text) frame — see
-    * [[x112FirstOccDedup]] for the operator contract. */
-  private[graft] def firstOccDedup(docs: DataFrame): DataFrame = {
-    val seg = docs
-      .select(col("doc_id"),
-        wsTokens(concat(lit("portal "), col("source"),
-          lit(" official mirror terms of service apply"
-            + " all rights reserved contact webmaster "),
-          col("text"))).as("toks"))
-      .select(col("doc_id"), col("toks"),
-        explode(sequence(lit(0L),
-          call_function("div", size(col("toks")).cast("long") + 7L, lit(8L))
-            - 1)).as("g"))
-      .select(col("doc_id"), col("g"),
-        array_join(slice(col("toks"), (col("g") * 8 + 1).cast("int"),
-          lit(8)), " ").as("segtxt"))
-      .withColumn("fp", md5(col("segtxt")))
-    val firstOcc = seg.groupBy(col("fp"))
-      .agg(min_by(struct(col("doc_id").as("fdoc"), col("g").as("fg")),
-        struct(col("doc_id"), col("g"))).as("fo"))
-      .select(col("fp"), col("fo.fdoc").as("fdoc"), col("fo.fg").as("fg"))
-    val keep = col("doc_id") === col("fdoc") && col("g") === col("fg")
-    val clean = array_join(transform(
-      sort_array(collect_list(when(keep, struct(col("g"), col("segtxt"))))),
-      x => x.getField("segtxt")), " ")
-    seg.join(firstOcc, Seq("fp"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_seg"),
-        sum(when(keep, 0L).otherwise(1L)).as("n_drop"),
-        md5(clean).as("clean_md5"),
-        when(length(clean) === 0, 0L)
-          .otherwise(size(split(clean, "\\s+")).cast("long"))
-          .as("clean_n_tok"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** x137 core over any (doc_id, text) frame: remove every MAXIMAL
-    * repeated run of ≥ k tokens, exactly (Lee et al. 2022's
-    * ExactSubstr, the published standard for LLM corpora — the
-    * operator the approximate family x33/x112/x116/x126 circles).
-    * Method: a token is duplicated iff SOME corpus-duplicated k-gram
-    * covers it; the union of duplicated k-gram intervals IS the union
-    * of maximal ≥k-token repeated runs (every repeated run of length
-    * L ≥ k is exactly covered by its L−k+1 duplicated k-grams, and
-    * any duplicated k-gram lies inside a repeated run) — so k-gram
-    * anchoring plus interval union computes the exact answer without
-    * a suffix array. Every occurrence of a duplicated run is dropped
-    * (the paper's conservative default; the keep-first-occurrence
-    * policy is x112's contract at segment granularity). Per doc:
-    * token/duplicated-token counts, maximal-span count and longest
-    * span, and the rebuilt clean text's md5 + token-count checksums
-    * (the x87/x112 convention). Scale shape: k-gram fingerprints are
-    * row-local array slices (md5s cross the wire, never text);
-    * duplication is one fp-keyed count ≥ 2 semi-join; coverage,
-    * span islands, and the rebuild are doc-keyed window passes over
-    * ONE sort (all three window functions share (doc, pos)); no
-    * all-pairs stage anywhere. */
-  private[graft] def exactSubstringDedup(docs: DataFrame, k: Int = 5): DataFrame = {
-    val toks = docs
-      .select(col("doc_id"), wsTokens(col("text")).as("toks"))
-    // guard: sequence(1, n) DESCENDS when n < 1 (Spark semantics), so
-    // docs shorter than k tokens must emit an empty gram list, not a
-    // bogus descending one
-    val gp = toks.select(col("doc_id"),
-        posexplode(when(size(col("toks")) >= k, transform(
-          sequence(lit(1), size(col("toks")) - (k - 1)),
-          i => md5(array_join(slice(col("toks"), i, lit(k)), " "))))
-          .otherwise(array().cast("array<string>")))
-          .as(Seq("gi", "fp")))
-    val dup = gp.groupBy(col("fp")).agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt") >= 2).select(col("fp"))
-    val dstart = gp.join(dup, Seq("fp"), "left_semi")
-      .select(col("doc_id"), col("gi").as("j"), lit(1L).as("isd"))
-    val tok = toks.select(col("doc_id"),
-        size(col("toks")).cast("long").as("n_tok"),
-        posexplode(col("toks")).as(Seq("j", "tk")))
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("j"))
-    val wc = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cf = tok.join(dstart, Seq("doc_id", "j"), "left")
-      .withColumn("reach",
-        max(when(col("isd") === 1L, col("j") + (k - 1))).over(wc))
-      .withColumn("covered",
-        col("reach").isNotNull && col("reach") >= col("j"))
-      .withColumn("st", when(col("covered") &&
-        !coalesce(lag(col("covered"), 1).over(w), lit(false)), 1L)
-        .otherwise(0L))
-      .withColumn("isl", sum(col("st")).over(wc))
-      .localCheckpoint()
-    val spans = cf.filter(col("covered"))
-      .groupBy(col("doc_id"), col("isl")).agg(count(lit(1)).as("slen"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_spans"), max(col("slen")).as("max_span"),
-        sum(col("slen")).as("n_dup_tok"))
-    val clean = array_join(transform(
-      sort_array(collect_list(when(!col("covered"),
-        struct(col("j"), col("tk"))))), x => x.getField("tk")), " ")
-    cf.groupBy(col("doc_id"))
-      .agg(max(col("n_tok")).as("n_tok"), md5(clean).as("clean_md5"),
-        when(length(clean) === 0, 0L)
-          .otherwise(size(split(clean, "\\s+")).cast("long"))
-          .as("clean_n_tok"))
-      .join(spans, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_tok"),
-        coalesce(col("n_dup_tok"), lit(0L)).as("n_dup_tok"),
-        (intRoundHalfAway(coalesce(col("n_dup_tok"), lit(0L)) * 10000L,
-          col("n_tok")).cast("double") / 1e4).as("dup_rate"),
-        coalesce(col("n_spans"), lit(0L)).as("n_spans"),
-        coalesce(col("max_span"), lit(0L)).as("max_span"),
-        col("clean_md5"), col("clean_n_tok"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** X137: exact repeated-substring dedup (Lee et al. 2022) on the
-    * boilerplate-prefixed corpus — the SAME prefixed population x112
-    * segment-dedups, so the two published line/run-dedup semantics
-    * are directly comparable: x112's fixed 8-token grid keeps first
-    * occurrences; this removes every occurrence of every maximal
-    * ≥5-token repeated run, HOWEVER it is aligned (the fixed grid
-    * provably misses unaligned repeats — EngineSpec pins one). See
-    * [[exactSubstringDedup]] for the exact-cover argument and the
-    * scale shape. */
-  val x137ExactSubstringDedup: Q = (s, d) =>
-    exactSubstringDedup(spread(s, Tables.documents(s, d))
-      .select(col("doc_id"),
-        concat(lit("portal "), col("source"),
-          lit(" official mirror terms of service apply"
-            + " all rights reserved contact webmaster "),
-          col("text")).as("text")))
-
-  /** X111: cross-modal alignment scoring — the pairing-QUALITY filter
-    * real multimodal curation runs (CLIP-score thresholding: LAION
-    * keeps image-text pairs whose embedding cosine clears a cut).
-    * x104 audits that a doc HAS a paired vector; this scores how well
-    * the pair agrees: cosine between a 64-dim hashed bag-of-words
-    * text vector (md5-bucket TF — the x102 bucket contract at
-    * embedding width) and the doc's paired embedding, swept over a
-    * threshold grid per source (x105's one-pass curve shape — the
-    * whole policy table from ONE scoring pass). Shape: one documents
-    * scan → (doc, bucket) TF aggregation (map-side combinable, ≤64
-    * rows/doc); embeddings exploded once and joined on
-    * (id, bucket) — the sparse dot never replicates full vectors per
-    * token row; norms are a BIGINT sum (text side) and a row-local
-    * ordered fold (vector side). Determinism: every per-doc sum is
-    * an order-free BIGINT of 1e6-quantized products (groupBy double
-    * sums are partition-order-dependent — the x39 recipe); the final
-    * cosine is one identical double chain both engines run on those
-    * integers. Docs with no tokens or no paired vector drop (inner
-    * semantics, documented). */
-  val x111AlignmentScore: Q = (s, d) => {
-    // r11 (guide §2.3/§2.4): per-doc bucket counts pivot to ONE dense
-    // 64-long array (the clfFeatures recipe), so the dot product folds
-    // row-locally inside a single doc-keyed join — the former
-    // 64×|corpus| embedding explode and the (doc_id, bucket) join are
-    // gone, and nt2 rides the same aggregation instead of a third
-    // join. Absent buckets contribute round(0·e·1e6) = 0, the exact
-    // integer the sparse join never summed — dotq is bit-identical.
-    val arr = Tables.documents(s, d)
-      .select(col("doc_id"), col("source"),
-        explode(wsTokens(lower(col("text")))).as("w"))
-      .filter(col("w") =!= "")
-      .groupBy(col("doc_id"), col("source"),
-        pmod(graft.dedup.NearDup.md5Hash32(col("w")), lit(64L)).as("bucket"))
-      .agg(count(lit(1)).as("cnt"))
-      .groupBy(col("doc_id"), col("source"))
-      .agg(map_from_entries(collect_list(struct(col("bucket"), col("cnt"))))
-          .as("m"),
-        sum(col("cnt") * col("cnt")).as("nt2"))
-      .select(col("doc_id"), col("source"), col("nt2"),
-        transform(sequence(lit(0L), lit(63L)),
-          b => coalesce(element_at(col("m"), b), lit(0L))).as("cs"))
-    val scored = arr
-      .join(Tables.embeddings(s, d)
-        .select(col("vec_id").as("doc_id"), col("embedding")), Seq("doc_id"))
-      .select(col("source"),
-        aggregate(zip_with(col("cs"), col("embedding"), (c, e) =>
-          round(c.cast("double") * e.cast("double") * 1e6, 0).cast("long")),
-          lit(0L), (acc, v) => acc + v).as("dotq"),
-        col("nt2"),
-        aggregate(col("embedding"), lit(0.0),
-          (acc, x) => acc + x.cast("double") * x.cast("double")).as("ne2"))
-      .select(col("source"),
-        round((col("dotq").cast("double") / 1e6) /
-          (sqrt(col("nt2").cast("double")) * sqrt(col("ne2"))), 6).as("cos"))
-    scored
-      .select(col("source"), col("cos"),
-        explode(array(lit(-5), lit(-2), lit(0), lit(2), lit(5))).as("t100"))
-      .groupBy(col("source"), col("t100"))
-      .agg(count(lit(1)).as("n_pairs"),
-        sum(when(col("cos") > col("t100").cast("double") / 100, 1L)
-          .otherwise(0L)).as("n_pass"))
-      .select(col("source"), (col("t100").cast("double") / 100).as("threshold"),
-        col("n_pairs"), col("n_pass"),
-        (intRoundHalfAway(col("n_pass") * 10000L, col("n_pairs"))
-          .cast("double") / 1e4).as("pass_rate"))
-      .orderBy(col("source"), col("threshold"))
-  }
-
-  /** X113: CCNet perplexity bucketing — the selection step the CCNet
-    * pipeline actually ships (Wenzek et al. 2020 §4.3): score every
-    * doc with the target-domain LM (x83's interpolated Kneser-Ney,
-    * one contract — the scored table is shared CTE-for-CTE with the
-    * x83 oracle) and split each language's population into
-    * head/middle/tail perplexity terciles; training mixes then sample
-    * by bucket (head-heavy for quality, tail kept for diversity).
-    * Cuts are nearest-rank on the already-1e-4-quantized ppl via the
-    * x32 histogram method — the corpus shuffles only (lang, ppl)
-    * counts, the cumulative window runs over the tiny histogram, the
-    * cut table broadcasts back, and the tercile test `3·cum ≥ k·n` is
-    * pure integer arithmetic. The scored table is localCheckpointed
-    * once (it feeds the histogram AND the final join). Docs with
-    * under 3 tokens have no trigram steps and drop (x83's inner
-    * semantics). */
-  val x113PplBuckets: Q = (s, d) => {
-    val docs = Tables.documents(s, d)
-    val scored = knTrigramScores(docs, docs.filter(col("lang") === "en"))
-      .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-      .select(col("doc_id"), col("lang"), col("ppl3_kn"))
-      .localCheckpoint()
-    val hist = scored.groupBy(col("lang"), col("ppl3_kn"))
-      .agg(count(lit(1)).as("c"))
-    val cuts = hist
-      .withColumn("cum", sum(col("c")).over(
-        Window.partitionBy(col("lang")).orderBy(col("ppl3_kn"))))
-      .withColumn("n", sum(col("c")).over(Window.partitionBy(col("lang"))))
-      .groupBy(col("lang"))
-      .agg(min(when(col("cum") * 3 >= col("n"), col("ppl3_kn"))).as("c1"),
-        min(when(col("cum") * 3 >= col("n") * 2, col("ppl3_kn"))).as("c2"))
-    scored.join(broadcast(cuts), Seq("lang"))
-      .select(col("doc_id"), col("lang"), col("ppl3_kn"),
-        when(col("ppl3_kn") <= col("c1"), lit("head"))
-          .when(col("ppl3_kn") <= col("c2"), lit("middle"))
-          .otherwise(lit("tail")).as("bucket"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** x108's feature table: per doc, the 64-bucket hashed-BOW
-    * normalized counts (x111's featurizer — one bucket contract) plus
-    * the quality gate's own clipped signals (length, punctuation,
-    * stopword — buckets 64-66) and a bias (67), labelled by the
-    * engine's [[qualityScore]] ≥ 0.5 gate. Returns (tf, nDocs);
-    * docs with no tokens drop (inner semantics). Dense rows: nDocs
-    * is exactly the row count. Consumers whose downstream pins its
-    * own materialization ride this too; the five single-plan SQL
-    * scorers use [[clfTf1]]. */
-  private[graft] def qualityClfTf(s: SparkSession, d: String): (DataFrame, Long) = {
-    val tf = clfFeatures(Tables.documents(s, d)).localCheckpoint()
-    (tf, tf.count())
-  }
-
-  /** Single-pass feature table: NO checkpoint, NO count (optimization
-    * r12, guide §2.4/§5). For carriers that consume the features
-    * exactly once inside ONE adaptively-planned SQL job (the
-    * score-and-aggregate scorers x118/x122/x136/x163/x164): fusing the
-    * build into the consumer's own job drops the former eager
-    * localCheckpoint + count() pair (two jobs per carrier at the
-    * ~0.15 s job floor), avoids materializing a corpus-sized feature
-    * table a single-pass plan never re-reads, and runs the whole
-    * scan→features→score→rollup chain as ONE adaptively-planned job.
-    * Measured (isolated min-of-2, sf0.1, quiet box): x118 2.01→1.38,
-    * x122 1.35→0.41, x136 2.42→1.52, x163 1.21→0.44, x164 1.13→0.40.
-    * Deliberately NOT used by the carriers whose downstream pins its
-    * own materialization barrier (x138/x150/x168 checkpoint a derived
-    * table; x157/x158/x159 consume via queryExecution.toRdd): there
-    * the build executes inside a checkpoint/RDD materialization that
-    * does not get the final-stage adaptive replanning, and the same
-    * swap MEASURED SLOWER (x150 1.86→2.74, x138 1.54→2.14, x157
-    * 1.39→1.69) — those keep [[qualityClfTf]]. */
-  private[graft] def clfTf1(s: SparkSession, d: String): DataFrame =
-    clfFeatures(Tables.documents(s, d))
-
-  /** The classifier's feature rows over ANY (doc_id, text) frame —
-    * shared by training (x108), the staged consumers (x118/x122), and
-    * the STREAMING admission gate
-    * ([[graft.streaming.DocStream.admitQuality]]), so no consumer can
-    * drift from the features the registry weights were trained on.
-    * Docs with zero tokens produce no rows (they carry no signal and
-    * no gate can score them).
-    *
-    * Representation (optimization r11, guide §2.3/§2.4): ONE DENSE row
-    * per doc — (doc_id, y, xs: array<double>[68]) with xs(b) = 0.0 for
-    * buckets the doc never fires — instead of the former sparse
-    * (doc_id, y, bucket, x) rows. Every downstream logit/gradient is
-    * an integer sum whose absent-bucket terms are round(w·0·1e9) = 0,
-    * so all scores, gradients and trained weights are BIT-IDENTICAL to
-    * the sparse path; what changes is the plan shape: scoring loses
-    * its per-consumer (bucket-join + doc_id re-shuffle) pair and the
-    * 20-step trainer loses 2 full shuffles of the feature table PER
-    * STEP (each step is now one row-local scan onto a 68-key
-    * map-side-combinable aggregate).
-    *
-    * Build shape — two branches over the doc scan (bucket counts; the
-    * label/side-feature projection) joined on doc_id. A ONE-scan fused
-    * shape (y/f0..f2 computed below the explode and folded through
-    * both aggregations as first(...)) was prototyped and MEASURED
-    * SLOWER in r12 (isolated noop-timed at sf0.1: fused ≈ 1.9–2.3 s vs
-    * ≈ 1.2 s for this shape; carrying even literal constants through
-    * the two aggregations cost ≈ +0.8 s — the extra aggregate-buffer
-    * columns price every token row, while the second text scan prices
-    * only docs and runs as a parallel branch). Kept two-scan on the
-    * measurement (guide §1.1: the "ideal" one-pass plan lost to the
-    * empirical loop). */
-  private[graft] def clfFeatures(docs0: DataFrame): DataFrame = {
-    val docs = docs0.select(col("doc_id"), col("text"))
-    val bowMap = docs
-      .select(col("doc_id"), explode(wsTokens(lower(col("text")))).as("w"))
-      .filter(col("w") =!= "")
-      .groupBy(col("doc_id"),
-        pmod(graft.dedup.NearDup.md5Hash32(col("w")), lit(64L)).as("bucket"))
-      .agg(count(lit(1)).as("cnt"))
-      .groupBy(col("doc_id"))
-      .agg(map_from_entries(collect_list(struct(col("bucket"), col("cnt"))))
-          .as("m"),
-        sum(col("cnt")).as("n_tok"))
-    val lenScore = least(tokenCount(col("text")).cast("double") / 50.0, lit(1.0))
-    val punctOk = lit(1.0) - least(punctRatio(col("text")) * 5.0, lit(1.0))
-    val stopOk = least(stopwordRatio(col("text"), stopwords) * 10.0, lit(1.0))
-    val lab = docs.select(col("doc_id"),
-      (qualityScore(col("text"), stopwords) >= 0.5).cast("long").as("y"),
-      array(lenScore, punctOk, stopOk, lit(1.0)).as("fs"))
-    bowMap.join(lab, Seq("doc_id"))
-      .select(col("doc_id"), col("y"),
-        concat(
-          transform(sequence(lit(0L), lit(63L)), b =>
-            coalesce(element_at(col("m"), b), lit(0L)).cast("double")
-              / col("n_tok").cast("double")),
-          col("fs")).as("xs"))
-  }
-
-  /** A weight RELATION (bucket, wb — the registry/store schema)
-    * pivoted to the 1-row broadcastable array form the dense scorer
-    * consumes: ws(b) = wb, in bucket order. */
-  private[graft] def clfWRow(wdf: DataFrame): DataFrame =
-    wdf.groupBy().agg(wsOf.as("ws"))
-
-  /** The aggregate behind [[clfWRow]]/[[trajRow]]: the group's wb
-    * values in bucket order, or an in-plan error unless its buckets
-    * are exactly 0..67 — zip_with against the 68-wide `xs` would
-    * otherwise null-pad a wrong-width relation into NULL scores. */
-  private def wsOf: Column = {
-    val sorted = array_sort(collect_list(
-      struct(col("bucket").cast("long").as("bucket"), col("wb"))))
-    when(transform(sorted, e => e.getField("bucket")) ===
-        sequence(lit(0L), lit(67L)), transform(sorted, e => e.getField("wb")))
-      .otherwise(raise_error(
-        lit("weight relation must hold exactly the 68 buckets 0..67")))
-  }
-
-  /** The dense-row logit under the trainer's exact quantization
-    * contract: Σ_b round(ws(b)·xs(b)·1e9) as one row-local exact
-    * integer fold — the same integer the former sparse per-bucket sum
-    * produced (absent buckets contribute round(w·0·1e9) = 0). */
-  private[graft] def zqOf(xs: Column, ws: Column): Column =
-    aggregate(
-      zip_with(ws, xs, (w, x) => round(w * x * lit(1e9), 0).cast("long")),
-      lit(0L), (acc, v) => acc + v)
-
-  /** σ of a 1e9-quantized logit, 1e-6-quantized after evaluation —
-    * the one transcendental seam every scorer shares. */
-  private def pqOf(zq: Column): Column =
-    round((lit(1.0) / (lit(1.0)
-      + exp(-(zq.cast("double") / 1e9)))) * 1e6, 0).cast("long")
-
-  /** The persisted per-step trajectory (step, bucket, wb) pivoted to
-    * ONE broadcastable row — snaps = array of (step, ws) in step
-    * order — so every trajectory consumer (x157/x158/x159/x168)
-    * scores all snapshots row-locally off the dense feature rows. */
-  private[graft] def trajRow(traj: DataFrame): DataFrame =
-    traj.groupBy(col("step"))
-      .agg(wsOf.as("ws"))
-      .groupBy()
-      .agg(array_sort(collect_list(struct(col("step"), col("ws"))))
-        .as("snaps"))
-
-  /** Per-snapshot TRUE-LABEL probabilities (1e-6-quantized, step
-    * order) of one dense feature row as one ARRAY column: the
-    * zip_with/aggregate folds stream both arrays once per step, which
-    * measured ~4× faster than the statically-unrolled twin (whose
-    * per-term array/struct re-extraction allocates wrappers and whose
-    * generated method is too large to stay on the codegen path). */
-  private[graft] def trajPtqs(snaps: Column, xs: Column, y: Column): Column =
-    transform(snaps, sn => {
-      val pq = pqOf(zqOf(xs, sn.getField("ws")))
-      when(y === 1L, pq).otherwise(lit(1000000L) - pq)
-    })
-
-  /** [[intRoundHalfAway]] on task-side longs — the same integer chain
-    * (SQL `div` on non-negative operands is Long `/`). */
-  private[graft] def intRoundHalfAwayL(sv: Long, n: Long): Long =
-    (if (sv < 0) -1L else 1L) * ((2L * math.abs(sv) + n) / (2L * n))
-
-  /** The persisted trajectory collected to a step-ascending,
-    * bucket-ascending weight matrix — the driver-pinned twin of
-    * [[trajRow]]'s broadcast array (20×68 rows by contract, one
-    * trivial job). */
-  private def trajSnapsOf(traj: DataFrame): Array[Array[Double]] =
-    traj.select(col("step"), col("bucket"), col("wb")).collect()
-      .groupBy(_.getLong(0)).toArray.sortBy(_._1)
-      .map { case (_, rows) =>
-        rows.sortBy(_.getLong(1)).map(_.getDouble(2)) }
-
-  /** Per-doc trajectory scoring, TASK-SIDE (r12, guide §1.2 — the
-    * [[trainQualityClfSteps]] shape): one compiled fold per dense
-    * feature row replaces the interpreted zip_with/aggregate lambda
-    * chains of the former row-local column expressions (a Catalyst
-    * higher-order function never enters whole-stage codegen, so each
-    * of the 20×68 per-row terms paid interpreted-lambda and boxing
-    * overhead on top of its arithmetic). The integers are identical:
-    * [[rndQ]] IS Spark's round(x,0).cast(long) (EngineSpec-pinned),
-    * exp is the same java.lang.Math.exp codegen calls, operand order
-    * ws(b)·xs(b)·1e9 and the σ chain match [[zqOf]]/[[pqOf]]
-    * verbatim, and the fold runs left-to-right exactly like the
-    * former `aggregate`. Emits (doc_id, y, xs, pqs) with pqs the
-    * step-ordered 1e-6-quantized P(y=1) per snapshot; the TRUE-LABEL
-    * ptq of [[trajPtqs]] is (y==1 ? pq : 1e6−pq), applied by each
-    * consumer. A ws/xs length mismatch now fails loudly
-    * (ArrayIndexOutOfBounds) instead of the former zip_with
-    * null-padding — the ADVICE-r11 contract hardening. */
-  private[graft] def trajPqRows(tf: DataFrame, traj: DataFrame)
-      : org.apache.spark.rdd.RDD[(Long, Long, Array[Double], Array[Long])] = {
-    val snaps = trajSnapsOf(traj)
-    tf.select(col("doc_id"), col("y"), col("xs")).queryExecution.toRdd
-      .map { r =>
-        val docId = r.getLong(0); val y = r.getLong(1)
-        val xs = r.getArray(2).toDoubleArray()
-        val pqs = new Array[Long](snaps.length)
-        var i = 0
-        while (i < snaps.length) {
-          val ws = snaps(i)
-          var zq = 0L
-          var b = 0
-          while (b < ws.length) { zq += rndQ(ws(b) * xs(b) * 1e9); b += 1 }
-          pqs(i) = rndQ((1.0 / (1.0
-            + math.exp(-(zq.toDouble / 1e9)))) * 1e6)
-          i += 1
-        }
-        (docId, y, xs, pqs)
-      }
-  }
-
-  /** Registry-weight LOGITS of a feature table under the trainer's
-    * exact quantization contract (1e9-quantized): (doc_id, y, zq).
-    * The pre-σ stage of [[clfScores]], exposed separately because
-    * temperature scaling (x136) rescales the logit BEFORE the
-    * sigmoid — calibration must share the exact aggregation the
-    * uncalibrated score used. */
-  private[graft] def clfLogits(tf: DataFrame, wdf: DataFrame): DataFrame =
-    tf.crossJoin(broadcast(clfWRow(wdf)))
-      .select(col("doc_id"), col("y"), zqOf(col("xs"), col("ws")).as("zq"))
-
-  /** Registry-weight scoring of a feature table under the trainer's
-    * exact quantization contract (1e9-quantized logits, σ quantized
-    * 1e-6 after evaluation): (doc_id, y, pq). Shared by x118, x122,
-    * and the streaming gate — one scoring definition, no drift. */
-  private[graft] def clfScores(tf: DataFrame, wdf: DataFrame): DataFrame =
-    clfLogits(tf, wdf)
-      .select(col("doc_id"), col("y"),
-        round((lit(1.0) / (lit(1.0)
-          + exp(-(col("zq").cast("double") / 1e9)))) * 1e6, 0)
-          .cast("long").as("pq"))
-
-  /** x108's trainer: full-batch logistic-regression gradient descent
-    * over the sparse feature table — `iters` steps at learning rate
-    * `eta`, weights driver-pinned between steps (the k-means shape:
-    * model on the driver, data distributed). Determinism: per-doc
-    * logits and per-bucket gradients are order-free BIGINT sums of
-    * 1e9-/1e6-quantized terms (partition-order-proof); the logistic
-    * σ is quantized at 1e-6 AFTER evaluation, wide enough that the
-    * two engines' ≤1-ulp exp() difference cannot flip it (the x39
-    * transcendental-quantization rule); the weight update is one
-    * identical double chain on those integers, so driver and the
-    * oracle's unrolled per-iteration SQL agree exactly. */
-  private[graft] def trainQualityClf(tf: DataFrame, n: Long,
-      dFeat: Int = 68, iters: Int = 20, eta: Double = 16.0): Array[Double] =
-    trainQualityClfSteps(tf, n, dFeat, iters, eta).last
-
   /** Spark's `round(x, 0).cast("long")` on a double, replicated for
     * the trainer's task-side fold: Round on DoubleType evaluates
     * BigDecimal(d).setScale(0, HALF_UP).toDouble (NaN/Inf pass
@@ -8192,8 +231,8 @@ object TrainingData {
     if (v.isNaN || v.isInfinite) v.toLong
     else if (math.abs(v) >= 4.503599627370496e15) v.toLong // ≥2^52: integral
     else {
-      // branch-free HALF_UP without the BigDecimal allocation (r12,
-      // guide §1.2 — this sits inside every trainer/consumer fold's
+      // branch-free HALF_UP without the BigDecimal allocation (this
+      // sits inside every trainer/consumer fold's
       // per-element hot path). Exactness argument, pinned by the
       // EngineSpec property test against the BigDecimal reference:
       // for |v| < 2^52, floor(|v|) is exact and |v| − floor(|v|) is
@@ -8210,6692 +249,27 @@ object TrainingData {
       (if (v < 0) -r else r).toLong
     }
 
-  /** [[trainQualityClf]] with the full per-step weight TRAJECTORY
-    * (snapshot after each update — w₁…w₂₀): identical numerics, one
-    * extra array copy per step. x157's dataset cartography scores
-    * every doc under every snapshot, which is the published use of a
-    * training trajectory nobody else consumes. */
-  private[graft] def trainQualityClfSteps(tf: DataFrame, n: Long,
-      dFeat: Int = 68, iters: Int = 20,
-      eta: Double = 16.0): Seq[Array[Double]] = {
-    val out = Seq.newBuilder[Array[Double]]
-    // ONE job per GD step (r12, guide §1.2/§2.4): the gradient is an
-    // order-free per-dim BIGINT sum, so each step rides a single RDD
-    // aggregate over the checkpointed feature rows — task results
-    // carry dFeat longs straight back to the driver, with no exchange
-    // and no per-step AQE stage job (the former SQL shape ran a
-    // 2-stage job per step: posexplode → 68-key shuffle → collect;
-    // measured 2 scheduler round-trips per step at the ~0.2 s/job
-    // floor, which dominated x108/x175 at bench scale). The plan is
-    // resolved ONCE — the 20 steps re-run one pinned RDD chain
-    // instead of re-analyzing a fresh Dataset per step. Per-row math
-    // replicates the SQL chain exactly ([[rndQ]]; exp is the same
-    // java.lang.Math.exp on both paths), so logits, σ, gradients and
-    // the trained weights stay bit-identical — every step still needs
-    // its own job (full-batch GD is data-dependent per step), but a
-    // step is now exactly one.
-    val rdd = tf.select(col("y"), col("xs")).queryExecution.toRdd
-      .map(r => (r.getLong(0), r.getArray(1).toDoubleArray()))
-    var w = Array.fill(dFeat)(0.0)
-    for (_ <- 1 to iters) {
-      val wl = w
-      val g = rdd.aggregate(new Array[Long](dFeat))((acc, row) => {
-        val (y, xs) = row
-        var zq = 0L
-        var b = 0
-        while (b < dFeat) { zq += rndQ(wl(b) * xs(b) * 1e9); b += 1 }
-        val pq = rndQ((1.0 / (1.0 + math.exp(-(zq.toDouble / 1e9)))) * 1e6)
-        val pmy = pq.toDouble / 1e6 - y.toDouble
-        b = 0
-        while (b < dFeat) { acc(b) += rndQ(pmy * xs(b) * 1e6); b += 1 }
-        acc
-      }, (a, b2) => {
-        var i = 0
-        while (i < dFeat) { a(i) += b2(i); i += 1 }
-        a
-      })
-      w = Array.tabulate(dFeat)(b =>
-        w(b) - eta * ((g(b).toDouble / 1e6) / n.toDouble))
-      out += w
-    }
-    out.result()
-  }
-
-  /** The persisted per-step weight trajectory (step 1..20, bucket,
-    * wb) beside the final-weight registry — built once per fixture
-    * like [[ensureClfWeights]] (the same trainer run, all snapshots
-    * kept). */
-  private[graft] def ensureClfTrajectory(s: SparkSession, d: String): String =
-    Store.materialize("clftraj", "v1", d, "documents") { path =>
-      val (tf, n) = qualityClfTf(s, d)
-      val steps = trainQualityClfSteps(tf, n)
-      s.createDataFrame(steps.zipWithIndex.flatMap { case (w, i) =>
-          w.toSeq.zipWithIndex.map { case (v, b) =>
-            ((i + 1).toLong, b.toLong, v) }
-        }.toSeq)
-        .toDF("step", "bucket", "wb")
-        .coalesce(1).write.mode("overwrite").parquet(path)
-    }
-
-  /** X108: quality-classifier training — the model-based filter step
-    * real curation pipelines run where this engine so far only had
-    * rules: distill the hand-written quality gate into a TRAINED
-    * linear scorer (the CCNet/fastText/LLaMA-style "train a
-    * classifier on labeled seed data" shape; here the rule gate IS
-    * the labeller, which is exactly how reference-quality filters
-    * are bootstrapped). Full-batch logistic GD, 20 steps, over
-    * hashed-BOW + gate-signal features ([[qualityClfTf]]); output is
-    * the learned model itself — 68 (bucket, weight) rows. Scale
-    * shape: ONE corpus scan builds the dense feature table
-    * (localCheckpointed; at 100 TB features are staged ingest
-    * columns — the x32b contract), then every GD step is one
-    * row-local scan of that table onto a single 68-key map-side-
-    * combinable integer aggregation (r11 — the former per-step
-    * doc-keyed logit shuffle + gradient join-back are gone)
-    * and moves 68 numbers to the driver; cost scales with corpus
-    * size × iters, never corpus². EngineSpec pins sign/accuracy on a
-    * crafted separable micro-set AND accuracy > majority base rate
-    * on the corpus. */
-  val x108QualityClassifier: Q = (s, d) => {
-    val (tf, n) = qualityClfTf(s, d)
-    val w = trainQualityClf(tf, n)
-    s.createDataFrame(w.toSeq.zipWithIndex.map { case (v, b) => (b.toLong, v) })
-      .toDF("bucket", "wraw")
-      .select(col("bucket"), round(col("wraw"), 6).as("weight"))
-      .orderBy(col("bucket"))
-  }
-
-  /** X118: classifier calibration audit (reliability table) — the
-    * acceptance check a trained filter model ships with: docs scored
-    * under the REGISTRY weights ([[ensureClfWeights]] — staged once,
-    * never retrained per consumer), predicted probability binned into
-    * deciles, and per bin the mean prediction vs the observed
-    * positive rate plus their gap (the per-bin ECE term). A model
-    * whose bin-9 docs are positive 60% of the time is overconfident
-    * regardless of its accuracy — this table is what decides whether
-    * the filter threshold can be trusted as a probability. Scoring
-    * replays the trainer's exact quantization contract (1e9-quantized
-    * logits, σ quantized 1e-6 after evaluation — the x39
-    * transcendental rule), so the ORACLE's from-scratch 20-step
-    * retrain proves the staged store bit-identical. Shape: one
-    * feature-build scan, a 68-row broadcast join, doc-keyed logit
-    * aggregation onto ≤10 bins; at 100 TB the only corpus-sized cost
-    * is the scoring scan itself. Gap/means in pure-BIGINT
-    * [[intRoundHalfAway]]. */
-  val x118ClfCalibration: Q = (s, d) => {
-    val wdf = s.read.parquet(ensureClfWeights(s, d))
-    val tf = clfTf1(s, d)
-    val mp = intRoundHalfAway(col("spq"), col("n_docs"))
-    val pr = intRoundHalfAway(col("sy") * 1000000L, col("n_docs"))
-    clfScores(tf, wdf)
-      .select(col("y"), col("pq"))
-      .withColumn("bin",
-        least(call_function("div", col("pq"), lit(100000L)), lit(9L)))
-      .groupBy(col("bin"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("pq")).as("spq"), sum(col("y")).as("sy"))
-      .select(col("bin"), col("n_docs"),
-        (mp.cast("double") / 1e6).as("mean_pred"),
-        (pr.cast("double") / 1e6).as("pos_rate"),
-        (abs(mp - pr).cast("double") / 1e6).as("gap"))
-      .orderBy(col("bin"))
-  }
-
-  /** X136: temperature-scaled calibration (Guo et al. 2017) — closes
-    * the x108→x118 loop the round-9 verdict flagged: x118 MEASURES
-    * miscalibration, this FIXES it with the production-standard
-    * 1-parameter correction and re-emits the reliability table under
-    * σ(z/T*). T* comes from the persisted [[ensureClfTemp]] fit
-    * (val-split quantized-NLL grid argmin — staged beside the weight
-    * registry, the x98 model-artifact contract; the ORACLE refits
-    * weights AND temperature from scratch, re-proving both stores on
-    * every run). Scoring replays [[clfLogits]]' exact aggregation,
-    * then one σ(z/T) per doc ([[sigmaT]], 1e-6-quantized) onto ≤10
-    * bins — the only corpus-sized cost is the scoring scan, identical
-    * to x118's. EngineSpec pins NLL(T*) ≤ NLL(1) (grid-guaranteed)
-    * and ECE_after ≤ ECE_before on the val split. */
-  val x136TempScaling: Q = (s, d) => {
-    val wdf = s.read.parquet(ensureClfWeights(s, d))
-    val tdf = s.read.parquet(ensureClfTemp(s, d))
-    val tf = clfTf1(s, d)
-    val mp = intRoundHalfAway(col("spq"), col("n_docs"))
-    val pr = intRoundHalfAway(col("sy") * 1000000L, col("n_docs"))
-    clfLogits(tf, wdf)
-      .crossJoin(broadcast(tdf.select(col("tq"))))
-      .select(col("y"), col("tq"), sigmaT(col("zq"), col("tq")).as("pq"))
-      .withColumn("bin",
-        least(call_function("div", col("pq"), lit(100000L)), lit(9L)))
-      .groupBy(col("bin"), col("tq"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("pq")).as("spq"), sum(col("y")).as("sy"))
-      .select(col("bin"), col("n_docs"),
-        (mp.cast("double") / 1e6).as("mean_pred"),
-        (pr.cast("double") / 1e6).as("pos_rate"),
-        (abs(mp - pr).cast("double") / 1e6).as("gap"),
-        (col("tq").cast("double") / 1e2).as("t"))
-      .orderBy(col("bin"))
-  }
-
-  /** X138: classifier ROC / threshold-sweep evaluation — the
-    * acceptance table that completes the trainer family (x108 train →
-    * x136 calibrate → x122 filter → THIS evaluates): per decision
-    * threshold, predicted-positive mass, TPR, FPR, precision, plus
-    * the threshold-free ranking number — AUC by the exact
-    * Mann-Whitney statistic with midrank ties (2U = Σ_score
-    * pos·(2·cum_neg_below + neg), AUC = U/(P·N)), computed from the
-    * BOUNDED (pq, pos, neg) histogram (≤ 10⁶+1 rows regardless of
-    * corpus size — the x32/x130/x131 method; the only ordering is
-    * over distinct score values, never docs). The U and P·N products
-    * ride decimal(38,0)/HUGEINT so the rational stays exact at any
-    * corpus size (the x99b 128-bit lesson applied up front). One
-    * scoring scan → histogram; the 11-point threshold sweep and the
-    * AUC both fold that histogram. Precision is NULL (both engines)
-    * when a cut predicts nothing positive. */
-  val x138ClfRoc: Q = (s, d) => {
-    val wdf = s.read.parquet(ensureClfWeights(s, d))
-    val (tf, _) = qualityClfTf(s, d)
-    // checkpointed once: the histogram feeds the AUC fold AND the
-    // threshold sweep (the x131 scored-table precedent)
-    val hist = clfScores(tf, wdf)
-      .groupBy(col("pq"))
-      .agg(sum(col("y")).as("pos"), sum(lit(1L) - col("y")).as("neg"))
-      .localCheckpoint()
-    val wBelow = Window.orderBy(col("pq"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val au = hist
-      .withColumn("cumneg", coalesce(sum(col("neg")).over(wBelow), lit(0L)))
-      .agg(sum((col("pos") * (lit(2L) * col("cumneg") + col("neg")))
-          .cast("decimal(38,0)")).as("u2"),
-        sum(col("pos")).as("p"), sum(col("neg")).as("n"))
-      .select((intRoundHalfAway(col("u2") * lit(1000000L),
-        lit(2L) * (col("p").cast("decimal(38,0)") * col("n")))
-        .cast("double") / 1e6).as("auc"))
-    val grid = s.range(0, 11).select((col("id") * 100000L).as("t"))
-    hist.crossJoin(broadcast(grid))
-      .groupBy(col("t"))
-      .agg(sum(when(col("pq") >= col("t"), col("pos")).otherwise(0L)).as("tp"),
-        sum(when(col("pq") >= col("t"), col("neg")).otherwise(0L)).as("fp"),
-        sum(col("pos")).as("p"), sum(col("neg")).as("n"))
-      .crossJoin(broadcast(au))
-      .select(col("t"), (col("tp") + col("fp")).as("n_pred_pos"),
-        (intRoundHalfAway(col("tp") * 10000L, col("p"))
-          .cast("double") / 1e4).as("tpr"),
-        (intRoundHalfAway(col("fp") * 10000L, col("n"))
-          .cast("double") / 1e4).as("fpr"),
-        when(col("tp") + col("fp") > 0,
-          intRoundHalfAway(col("tp") * 10000L, col("tp") + col("fp"))
-            .cast("double") / 1e4).as("precision"),
-        col("auc"))
-      .orderBy(col("t"))
-  }
-
-  /** X139: uncertainty-margin selection (Lewis & Gale 1994's
-    * uncertainty sampling) — the label-acquisition step that keeps
-    * the x108 trainer alive in production: the rule gate labelled
-    * the seed set, and the next annotation batch should be the docs
-    * the model is LEAST sure about (margin |p − ½| smallest), where
-    * a human label buys the most decision-boundary information.
-    * x131's global histogram-cut recipe mirrored at the boundary:
-    * margin histogram (≤ 5·10⁵+1 rows regardless of corpus size),
-    * nearest-rank 5th-percentile cut, strict `<` keeps AT MOST the
-    * budget corpus-wide; per source the report carries doc counts,
-    * selection share, and the mean selected margin (how close to the
-    * boundary the batch actually sits — a source whose selections
-    * hug ½ is where the filter is guessing). One scoring pass + one
-    * bounded histogram + one broadcast-cut aggregation. */
-  val x139UncertaintySample: Q = (s, d) => {
-    val wdf = s.read.parquet(ensureClfWeights(s, d))
-    val docs = Tables.documents(s, d)
-    // checkpointed once: the margin table feeds the cut histogram AND
-    // the per-source aggregation (the x131 precedent)
-    val scored = clfScores(clfFeatures(docs), wdf)
-      .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
-      .withColumn("mg", abs(col("pq") - 500000L))
-      .localCheckpoint()
-    val hist = scored.groupBy(col("mg")).agg(count(lit(1)).as("cnt"))
-    val tot = hist.agg(sum(col("cnt")).as("n"))
-    val cut = hist
-      .withColumn("cum", sum(col("cnt")).over(Window.orderBy(col("mg"))))
-      .crossJoin(broadcast(tot))
-      .filter(col("cum") * 20L >= col("n"))
-      .agg(min(col("mg")).as("cut05"))
-    scored.crossJoin(broadcast(cut))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("mg") < col("cut05"), 1L).otherwise(0L)).as("n_sel"),
-        sum(when(col("mg") < col("cut05"), col("mg")).otherwise(0L))
-          .as("smg"),
-        max(col("cut05")).as("cut05"))
-      .select(col("source"), col("n_docs"), col("n_sel"),
-        (intRoundHalfAway(col("n_sel") * 10000L, col("n_docs"))
-          .cast("double") / 1e4).as("sel_rate"),
-        when(col("n_sel") > 0, intRoundHalfAway(col("smg"), col("n_sel"))
-          .cast("double") / 1e6).as("mean_margin_sel"),
-        (col("cut05").cast("double") / 1e6).as("cut_margin"))
-      .orderBy(col("source"))
-  }
-
-  /** X115: tokenizer drift under a FROZEN vocabulary — the x109/x60
-    * incremental contract applied to the tokenizer: production
-    * pipelines train the vocabulary once and then tokenize every
-    * arriving batch with it unchanged (retraining invalidates all
-    * previously tokenized data), so the ops table that matters is
-    * how the frozen tokenizer degrades on new data. Merges are
-    * trained on the BASE slice only (doc_id % 10 ≠ 7) over a
-    * deliberately tight top-16 word vocabulary — the cap a budgeted
-    * tokenizer ships with, and here it also exercises the trainer's
-    * early-exhaustion path for real — then the ARRIVING batch
-    * (doc_id % 10 = 7) is dictionary-segmented under those frozen
-    * merges. Per source: the x107 fertility columns plus the
-    * out-of-vocabulary occurrence count and rate (words the frozen
-    * training vocab never saw — the new-word signal that schedules a
-    * retrain, exactly x109's balance-drift trigger one modality
-    * over). Shape: one base scan (vocab), one batch scan (counts),
-    * dictionary segmentation once per distinct batch word, two
-    * broadcast joins (dictionary + ≤16-row vocab), |sources| rows
-    * out. */
-  val x115BpeDrift: Q = (s, d) => {
-    val base = Tables.documents(s, d).filter(col("doc_id") % 10 =!= 7)
-    val batch = Tables.documents(s, d).filter(col("doc_id") % 10 === 7)
-    val vocab = bpeVocab(base, 16)
-    val merges = graft.text.Bpe.trainOnVocab(vocab, 50).map(m => (m.lhs, m.rhs))
-    val vocabDf = s.createDataFrame(vocab.map(v => Tuple1(v._1))).toDF("w")
-      .withColumn("in_vocab", lit(1L))
-    val sw = batch
-      .select(col("source"), explode(wsTokens(lower(col("text")))).as("w"))
-      .filter(col("w") =!= "")
-      .groupBy(col("source"), col("w")).agg(count(lit(1)).as("f"))
-    val dict = graft.text.Bpe.segmentDict(sw.select(col("w")).distinct(), merges)
-      .select(col("w"), size(col("syms")).cast("long").as("n_sub"))
-    sw.join(broadcast(dict), Seq("w"))
-      .join(broadcast(vocabDf), Seq("w"), "left")
-      .groupBy(col("source"))
-      .agg(sum(col("f")).as("n_words"),
-        sum(col("f") * col("n_sub")).as("n_subtok"),
-        sum(when(col("n_sub") === 1, col("f")).otherwise(0L)).as("n_single"),
-        sum(when(col("in_vocab").isNull, col("f")).otherwise(0L)).as("n_oov"))
-      .select(col("source"), col("n_words"), col("n_subtok"),
-        col("n_single"), col("n_oov"),
-        (intRoundHalfAway(col("n_subtok") * 10000L, col("n_words"))
-          .cast("double") / 1e4).as("fertility"),
-        (intRoundHalfAway(col("n_oov") * 10000L, col("n_words"))
-          .cast("double") / 1e4).as("oov_rate"))
-      .orderBy(col("source"))
-  }
-
-  /** x116 core over any (doc_id, text) frame: content-defined chunk
-    * rows (doc_id, ci, fp, tok_len). A chunk boundary falls after
-    * token position i (i ≥ 4) iff the 32-bit md5 hash of the 4-token
-    * window ending at i is ≡ 0 (mod 16) — expected chunk ≈ 16
-    * tokens; the final chunk always closes at the last token. All
-    * row-local array expressions over a PROJECTED token array (the
-    * allShinglesOfToks re-evaluation rule); only (doc, chunk-md5,
-    * length) rows leave the scan. */
-  private[graft] def cdcChunkRows(docs: DataFrame): DataFrame = {
-    val withToks = docs
-      .select(col("doc_id"), wsTokens(col("text")).as("toks"))
-      .filter(size(col("toks")) > 0)
-    val t = col("toks")
-    val win = (i: Column) => concat_ws(" ",
-      element_at(t, i - 3), element_at(t, i - 2),
-      element_at(t, i - 1), element_at(t, i))
-    val withB = withToks.withColumn("bpos",
-      filter(sequence(lit(4), greatest(size(t), lit(4))), i =>
-        (i <= size(t)) &&
-          pmod(graft.dedup.NearDup.md5Hash32(win(i)), lit(16L)) === 0))
-    val ends0 = col("bpos")
-    val withE = withB.withColumn("ends",
-      when(size(ends0) > 0 && element_at(ends0, -1) === size(t), ends0)
-        .otherwise(concat(ends0, array(size(t)))))
-    val e = col("ends")
-    withE
-      .withColumn("starts", transform(e, (_, j) =>
-        when(j === 0, lit(1)).otherwise(element_at(e, j) + 1)))
-      .select(col("doc_id"), posexplode(transform(sequence(lit(1), size(e)),
-        k => struct(
-          md5(array_join(slice(t, element_at(col("starts"), k),
-            element_at(e, k) - element_at(col("starts"), k) + 1), " "))
-            .as("fp"),
-          (element_at(e, k) - element_at(col("starts"), k) + 1)
-            .cast("long").as("tok_len")))).as(Seq("ci", "ch")))
-      .select(col("doc_id"), col("ci").cast("long").as("ci"),
-        col("ch.fp").as("fp"), col("ch.tok_len").as("tok_len"))
-  }
-
-  /** X116: content-defined chunking dedup — the storage-layer dedup
-    * primitive (Muthitacharoen's LBFS / rolling-hash CDC) the
-    * fixed-segment family (x66/x87/x112) cannot replace: fixed
-    * 8-token windows lose EVERY fingerprint after a single leading
-    * insertion (all segments shift), while content-defined
-    * boundaries re-synchronize at the first hash boundary past the
-    * edit, so near-identical revisions still share most chunks
-    * (EngineSpec pins exactly this contrast on a crafted insertion
-    * pair). Boundaries from a 4-token rolling md5 window ≡ 0
-    * (mod 16); per doc: chunk count, chunks whose fingerprint occurs
-    * ≥2× corpus-wide, the duplicate token mass, and the
-    * deduplicatable fraction — the storage-savings estimate. Shape:
-    * x66's two-shuffle budget (fp-keyed occurrence count, join back,
-    * doc-keyed aggregation); chunking itself is scan-local and
-    * shift-invariant at any corpus size. */
-  val x116CdcChunks: Q = (s, d) => {
-    val chunks = cdcChunkRows(spread(s, Tables.documents(s, d)))
-    val dfc = chunks.groupBy(col("fp")).agg(count(lit(1)).as("occ"))
-    chunks.join(dfc, Seq("fp"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_chunks"),
-        sum(when(col("occ") >= 2, 1L).otherwise(0L)).as("n_dup"),
-        sum(col("tok_len")).as("n_tok"),
-        sum(when(col("occ") >= 2, col("tok_len")).otherwise(0L))
-          .as("dup_tok"))
-      .select(col("doc_id"), col("n_chunks"), col("n_dup"),
-        col("n_tok"), col("dup_tok"),
-        (intRoundHalfAway(col("dup_tok") * 10000L, col("n_tok"))
-          .cast("double") / 1e4).as("dedup_frac"))
-      .orderBy(col("doc_id"))
-  }
-
-  val defs: Map[String, Q] = Map(
-    "x116_cdc_chunks" -> x116CdcChunks,
-    "x111_alignment_score" -> x111AlignmentScore,
-    "x113_ppl_buckets" -> x113PplBuckets,
-    "x108_quality_classifier" -> x108QualityClassifier,
-    "x118_clf_calibration" -> x118ClfCalibration,
-    "x136_temp_scaling" -> x136TempScaling,
-    "x138_clf_roc" -> x138ClfRoc,
-    "x139_uncertainty_sample" -> x139UncertaintySample,
-    "x140_blocklist_filter" -> x140BlocklistFilter,
-    "x141_unimax_alloc" -> x141UnimaxAlloc,
-    "x142_label_noise" -> x142LabelNoise,
-    "x143_vendi_diversity" -> x143VendiDiversity,
-    "x144_filter_attribution" -> x144FilterAttribution,
-    "x146_kcenter_coreset" -> x146KcenterCoreset,
-    "x147_k_anonymity" -> x147KAnonymity,
-    "x148_margin_mining" -> x148MarginMining,
-    "x149_rholoss_select" -> x149RholossSelect,
-    "x150_el2n_prune" -> x150El2nPrune,
-    "x151_good_turing" -> x151GoodTuring,
-    "x152_quality_survivor" -> x152QualitySurvivor,
-    "x153_heaps_fit" -> x153HeapsFit,
-    "x154_zipf_fit" -> x154ZipfFit,
-    "x155_sgt_smoothing" -> x155SgtSmoothing,
-    "x156_repeat_value" -> x156RepeatValue,
-    "x157_cartography" -> x157Cartography,
-    "x158_forgetting_events" -> x158ForgettingEvents,
-    "x159_tracin_self" -> x159TracinSelf,
-    "x160_kmv_distinct" -> x160KmvDistinct,
-    "x161_weighted_reservoir" -> x161WeightedReservoir,
-    "x162_neyman_alloc" -> x162NeymanAlloc,
-    "x163_cohen_kappa" -> x163CohenKappa,
-    "x164_wilson_bound" -> x164WilsonBound,
-    "x165_truncation_loss" -> x165TruncationLoss,
-    "x166_doremi_weights" -> x166DoremiWeights,
-    "x167_tokenizer_audit" -> x167TokenizerAudit,
-    "x168_curriculum_schedule" -> x168CurriculumSchedule,
-    "x169_hll_distinct" -> x169HllDistinct,
-    "x170_scaling_fit" -> x170ScalingFit,
-    "x171_mink_membership" -> x171MinkMembership,
-    "x172_loo_source_value" -> x172LooSourceValue,
-    "x173_gradient_noise" -> x173GradientNoise,
-    "x174_token_burstiness" -> x174TokenBurstiness,
-    "x175_drift_c2st" -> x175DriftC2st,
-    "x176_embed_drift" -> x176EmbedDrift,
-    "x177_packing_policies" -> x177PackingPolicies,
-    "x178_pagerank_canonical" -> x178PagerankCanonical,
-    "x179_coverage_select" -> x179CoverageSelect,
-    "x115_bpe_drift" -> x115BpeDrift,
-    "x106_bpe_train" -> x106BpeTrain,
-    "x145_wordpiece_train" -> x145WordpieceTrain,
-    "x107_bpe_segment" -> x107BpeSegment,
-    "x117_unigram_viterbi" -> x117UnigramViterbi,
-    "x135_unigram_em" -> x135UnigramEm,
-    "x122_clf_filter" -> x122ClfFilter,
-    "x123_bpe_scaling" -> x123BpeScaling,
-    "x124_bbit_minhash" -> x124BbitMinhash,
-    "x125_jl_projection" -> x125JlProjection,
-    "x126_winnowing" -> x126Winnowing,
-    "x127_em_interpolation" -> x127EmInterpolation,
-    "x128_pairing_consistency" -> x128PairingConsistency,
-    "x130_quality_mad" -> x130QualityMad,
-    "x131_anneal_select" -> x131AnnealSelect,
-    "x132_pagination_stitch" -> x132PaginationStitch,
-    "x133_dsir_resample" -> x133DsirResample,
-    "x134_source_run_overlap" -> x134SourceRunOverlap,
-    "x112_firstocc_dedup" -> x112FirstOccDedup,
-    "x137_exact_substring" -> x137ExactSubstringDedup,
-    "x82_quality_percentile" -> x82QualityPercentile,
-    "x81_corpus_card" -> x81CorpusCard,
-    "x80_quality_trend" -> x80QualityTrend,
-    "x79_lang_margin" -> x79LangMargin,
-    "x78_gopher_rules" -> x78GopherRules,
-    "x77_soft_dedup_weights" -> x77SoftDedupWeights,
-    "x76_vocab_sketch" -> x76VocabSketch,
-    "x75_ivf_balance" -> x75IvfBalance,
-    "x74_sq8_recall" -> x74Sq8Recall,
-    "x73_dup_graph_stats" -> x73DupGraphStats,
-    "x72_edit_verify" -> x72EditVerify,
-    "x71_split_leakage" -> x71SplitLeakage,
-    "x70_mixture_sample" -> x70MixtureSample,
-    "x69_prototypicality" -> x69Prototypicality,
-    "x68_quality_psi" -> x68QualityPsi,
-    "x67_vocab_growth" -> x67VocabGrowth,
-    "x66_boilerplate_segments" -> x66BoilerplateSegments,
-    "x65_embed_whiten" -> x65EmbedWhiten,
-    "x64_backoff_logppl" -> x64BackoffLogppl,
-    "x83_kn_logppl" -> x83KnLogppl,
-    "x62b_lsh_tuner" -> x62bLshTuner,
-    "x86_domain_cap" -> x86DomainCap,
-    "x87_boilerplate_strip" -> x87BoilerplateStrip,
-    "x91_lsh_precision" -> x91LshPrecision,
-    "x92_dhash_store" -> x92DhashStore,
-    "x93_intradoc_dedup" -> x93IntradocDedup,
-    "x95_temperature_sweep" -> x95TemperatureSweep,
-    "x97_canon_decontaminate" -> x97CanonDecontaminate,
-    "x98_staged_dedup" -> x98StagedDedup,
-    "x99_pq_recall" -> x99PqRecall,
-    "x99b_opq_recall" -> x99bOpqRecall,
-    "x100_ivfpq_query" -> x100IvfPqQuery,
-    "x129_adc_rerank" -> x129AdcRerank,
-    "x109_ivf_addbatch" -> x109IvfAddBatch,
-    "x110_ivfpq_addbatch" -> x110IvfPqAddBatch,
-    "x114_opq_serve" -> x114OpqServe,
-    "x101_pq_health" -> x101PqHealth,
-    "x102_cms_heavyhitters" -> x102CmsHeavyHitters,
-    "x103_span_corruption" -> x103SpanCorruption,
-    "x104_pairing_audit" -> x104PairingAudit,
-    "x105_threshold_sweep" -> x105ThresholdSweep,
-    "x96_length_histogram" -> x96LengthHistogram,
-    "x88_quality_survivors" -> x88QualitySurvivors,
-    "x89_lang_confusion" -> x89LangConfusion,
-    "x84_perceptual_hash" -> x84PerceptualHash,
-    "x85_dhash_neardup" -> x85DhashNearDup,
-    "x63_pmi_cooccurrence" -> x63PmiCooccurrence,
-    "x62_lsh_eval" -> x62LshEval,
-    "x61_quality_sampling" -> x61QualitySampling,
-    "x60_signature_store" -> x60SignatureStore,
-    "x59_dedup_mass" -> x59DedupMass,
-    "x58_containment_dedup" -> x58ContainmentDedup,
-    "x57_embed_outliers" -> x57EmbedOutliers,
-    "x56_chunk_documents" -> x56ChunkDocuments,
-    "x55_lang_divergence" -> x55LangDivergence,
-    "x54_token_fertility" -> x54TokenFertility,
-    "x53_char_entropy" -> x53CharEntropy,
-    "x52_ngram_novelty" -> x52NgramNovelty,
-    "x51_embed_standardize" -> x51EmbedStandardize,
-    "x50_mixture_weights" -> x50MixtureWeights,
-    "x49_pca_project" -> x49PcaProject,
-    "x48_embed_correlation" -> x48EmbedCorrelation,
-    "x47_source_overlap" -> x47SourceOverlap,
-    "x46_embed_covariance" -> x46EmbedCovariance,
-    "x45_cluster_diversity" -> x45ClusterDiversity,
-    "x44_vocab_coverage" -> x44VocabCoverage,
-    "x43_embed_quantize" -> x43EmbedQuantize,
-    "x42_dsir_weights" -> x42DsirWeights,
-    "x41_gopher_dup_ngrams" -> x41GopherDupNgrams,
-    "x40_bigram_logppl" -> x40BigramLogppl,
-    "x39_unigram_logppl" -> x39UnigramLogppl,
-    "x38_length_histogram" -> x38LengthHistogram,
-    "x37_funnel_by_source" -> x37FunnelBySource,
-    "x36_train_split" -> x36TrainSplit,
-    "x119_semantic_leakage" -> x119SemanticLeakage,
-    "x120_hard_negatives" -> x120HardNegatives,
-    "x35_semantic_dedup" -> x35SemanticDedup,
-    "x35b_semdedup_nprobe2" -> x35bSemdedupNprobe2,
-    "x32_quality_calibration" -> x32QualityCalibration,
-    "x32b_quality_ingest" -> x32bQualityIngest,
-    "x33_substring_dedup" -> x33SubstringDedup,
-    "x34_filtered_ann" -> x34FilteredAnn,
-    "x31_ivf_query" -> x31IvfQuery,
-    "x29_bloom_dedup" -> x29BloomDedup,
-    "x30_tfidf_topk" -> x30TfidfTopk,
-    "x25_pack_sequences" -> x25PackSequences,
-    "x121_pack_boundary" -> x121PackBoundaryAudit,
-    "x26_pii_redaction" -> x26PiiRedaction,
-    "x27_domain_mixture" -> x27DomainMixture,
-    "x28_label_centroids" -> x28LabelCentroids,
-    "x19_gopher_repetition" -> x19GopherRepetition,
-    "x20_decontaminate" -> x20Decontaminate,
-    "x21_curation_funnel" -> x21CurationFunnel,
-    "x22_incremental_dedup" -> x22IncrementalDedup,
-    "x12_dedup_cosine" -> x12DedupCosine,
-    "x13_ann_ivf" -> x13AnnIvf,
-    "x14_dedup_clusters" -> x14DedupClusters,
-    "x24_dedup_survivors" -> x24DedupSurvivors,
-    "x15_simhash_dedup" -> x15SimhashDedup,
-    "x23_simhash64_dedup" -> ((s, d) => simhash64Dedup(s, d)),
-    "x16_stratified_sample" -> x16StratifiedSample,
-    "x1_dedup_exact" -> x1DedupExact,
-    "x2_dedup_minhash" -> x2DedupMinhash,
-    "x3_simhash" -> x3Simhash,
-    "x4_ngram_jaccard" -> x4NgramJaccard,
-    "x5_ann_cosine" -> x5AnnCosine,
-    "x6_ann_lsh" -> x6AnnLsh,
-    "x7_lang_id" -> x7LangId,
-    "x8_quality_score" -> x8QualityScore,
-    "x9_token_count" -> x9TokenCount,
-    "x10_fingerprint" -> x10Fingerprint)
-
-  /** Shared DuckDB generator for the winnowing oracles (x126/x134):
-    * the corpus-parameterized CTE chain ending at
-    * `wf(doc_id, m, n_sel, fps)` — positional 3-gram hashes,
-    * rightmost-min-of-each-4-window selection, sorted distinct
-    * fingerprints (the [[graft.dedup.NearDup.winnowedFingerprints]]
-    * contract verbatim). */
-  private def winnowCtesSql(corpusBody: String): String = s"""
-      corpus AS ($corpusBody),
-      t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-        FROM corpus),
-      hvt AS (SELECT doc_id,
-          list_transform(
-            list_transform(range(1, GREATEST(len(toks) - 1, 1)), i ->
-              toks[CAST(i AS INT)] || ' ' || toks[CAST(i + 1 AS INT)]
-                || ' ' || toks[CAST(i + 2 AS INT)]),
-            s -> ${md5Hash32Sql("s")}) AS hv
-        FROM t),
-      wres AS (SELECT doc_id, CAST(len(hv) AS BIGINT) AS m, hv,
-          list_sort(list_distinct(list_transform(
-            range(1, len(hv) - LEAST(4, len(hv)) + 2), j ->
-              j - 1 + list_max(list_filter(
-                range(1, LEAST(4, len(hv)) + 1), p ->
-                  hv[CAST(j + p - 1 AS INT)]
-                    = list_min(list_slice(hv, j,
-                        j + LEAST(4, len(hv)) - 1))))))) AS sel
-        FROM hvt WHERE len(hv) > 0),
-      wf AS (SELECT doc_id, m, CAST(len(sel) AS BIGINT) AS n_sel,
-          list_sort(list_distinct(list_transform(sel,
-            i -> hv[CAST(i AS INT)]))) AS fps
-        FROM wres)"""
-
-  private val hex16 = (expr: String) =>
-    (0 until 4).map { i =>
-      s"(strpos('0123456789abcdef', substring($expr, ${i + 1}, 1)) - 1) * ${1 << (4 * (3 - i))}"
-    }.mkString("(", " + ", ")")
+  /** The oracles' connected components over an undirected edge CTE
+    * `p(id_a, id_b)`: `edges2`, both orientations, and the recursive
+    * transitive closure `reach(a, b)` (the query needs WITH RECURSIVE;
+    * no trailing comma). */
+  private[queries] def reachCtes: String = """edges2 AS (
+        SELECT id_a AS a, id_b AS b FROM p
+        UNION ALL SELECT id_b, id_a FROM p),
+      reach(a, b) AS (
+        SELECT a, b FROM edges2
+        UNION
+        SELECT r.a, e.b FROM reach r JOIN edges2 e ON r.b = e.a)"""
 
   /** DuckDB mirror of md5Hash32: positional hex parse of the md5
     * prefix — 8 chars → 32-bit value in BIGINT arithmetic. */
-  private def md5Hash32Sql(expr: String): String =
+  private[queries] def md5Hash32Sql(expr: String): String =
     (0 until 8).map { i =>
       s"(strpos('0123456789abcdef', substring(md5($expr), ${i + 1}, 1)) - 1) * ${1L << (4 * (7 - i))}"
     }.mkString("(", " + ", ")")
 
-  /** DuckDB mirror of the native CosineSimilarity expression —
-    * list_sum accumulates left-to-right in double exactly like the
-    * codegen loop (proven by the x5/x12 hash matches). */
-  private def cosSql(a: String, b: String): String =
-    s"""(list_sum(list_transform(list_zip($a, $b),
-          p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-        / (sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-         * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))))"""
-
-  /** The IVF train+assign CTE chain (no leading WITH): cent0 seeds →
-    * two deterministic Lloyd iterations (6dp-rounded argmax assign,
-    * integer-sum element-wise mean quantized back to float) →
-    * `assigned` (vec_id, embedding, cell) — shared by [[ivfOracle]]
-    * (x13/x31) and the x35 semantic-dedup oracle. */
-  private lazy val ivfAssignedCtes: String = {
-    def assignSql(cents: String, out: String): String = s"""
-      $out AS (
-        SELECT vec_id, embedding, cid AS cell FROM (
-          SELECT e.vec_id, e.embedding, c.cid,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id
-              ORDER BY ROUND(${cosSql("e.embedding", "c.ce")}, 6) DESC, c.cid)
-              AS rk
-          FROM embeddings e, $cents c)
-        WHERE rk = 1)"""
-    def centSql(assign: String, out: String): String = s"""
-      $out AS (
-        SELECT cell AS cid,
-          list(CAST(CAST(sv AS DOUBLE) / (CAST(n AS DOUBLE) * 16777216)
-            AS FLOAT) ORDER BY pos) AS ce
-        FROM (
-          SELECT cell, i AS pos,
-            CAST(SUM(CAST(FLOOR(CAST(embedding[i] AS DOUBLE) * 16777216)
-              AS BIGINT)) AS BIGINT) AS sv,
-            COUNT(*) AS n
-          FROM $assign, UNNEST(range(1, len(embedding) + 1)) AS t(i)
-          GROUP BY cell, i)
-        GROUP BY cell)"""
-    s"""cent0 AS (
-        SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id < 16),
-      ${assignSql("cent0", "assign0")},
-      ${centSql("assign0", "cent1")},
-      ${assignSql("cent1", "assign1")},
-      ${centSql("assign1", "cent2")},
-      ${assignSql("cent2", "assigned")}"""
-  }
-
-  /** Shared DuckDB generators for the PQ oracles (x99/x100): exact
-    * squared L2 as an ordered list fold; nearest-centroid assignment
-    * on ROUND(L2²·1e6) BIGINT with cid tie-break; exact integer-mean
-    * recentering (the Spark side's lloydStep conventions). */
-  private def pqL2Sql(a: String, b: String): String =
-    s"""list_sum(list_transform(list_zip($a, $b),
-       p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
-         * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))))"""
-
-  private def pqAssignSql(sub: String, cents: String, out: String): String = s"""
-        $out AS (SELECT vec_id, m, cell, sub FROM (
-          SELECT s.vec_id, s.m, c.cid AS cell, s.sub,
-            ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
-              ORDER BY CAST(ROUND(${pqL2Sql("s.sub", "c.ce")} * 1e6, 0) AS BIGINT),
-                c.cid) AS rk
-          FROM $sub s JOIN $cents c ON c.m = s.m) WHERE rk = 1)"""
-
-  private def pqCentSql(assigned: String, out: String): String = s"""
-        $out AS (SELECT m, cell AS cid,
-          list(CAST(CAST(sv AS DOUBLE) / (CAST(n AS DOUBLE) * 16777216)
-            AS FLOAT) ORDER BY pos) AS ce
-        FROM (
-          SELECT m, cell, i AS pos,
-            CAST(SUM(CAST(FLOOR(CAST(sub[i] AS DOUBLE) * 16777216)
-              AS BIGINT)) AS BIGINT) AS sv,
-            COUNT(*) AS n
-          FROM $assigned, UNNEST(range(1, len(sub) + 1)) AS t(i)
-          GROUP BY m, cell, i)
-        GROUP BY m, cell)"""
-
-  /** Shared DuckDB generators for the BPE oracles (x106/x107): the
-    * full 50-iteration training unrolled as chained MATERIALIZED CTEs
-    * (word-frequency vocab → per-iteration pair counts → argmax merge
-    * → greedy apply), with greedy left-to-right application written in
-    * the same closed-form run-parity list expression as the Spark
-    * side ([[graft.text.Bpe]]). An exhausted iteration yields a
-    * chr(1) sentinel merge that can never match a real symbol (and is
-    * filtered from x106's output), so fixed-depth SQL mirrors the
-    * data-dependent early stop — the m1 gated-stage pattern. */
-  private val bpeK = 50
-
-  private def bpeApplySql(from: String): String = s"""
-      SELECT w, f, list_filter(list_transform(range(1, len(s0)+1), i ->
-          CASE WHEN i > 1 AND sel[i-1] THEN NULL
-               WHEN sel[i] THEN ma || mb
-               ELSE s0[i] END), x -> x IS NOT NULL) AS syms
-      FROM (
-        SELECT w, f, s0, ma, mb, ml,
-          list_transform(range(1, len(s0)+1), i -> ml[i] AND
-            ((i - 1 - COALESCE(list_max(list_filter(range(1, len(s0)+1),
-                j -> j < i AND NOT ml[j])), 0)) % 2 = 0)) AS sel
-        FROM (
-          SELECT w, f, syms AS s0, m.a AS ma, m.b AS mb,
-            list_transform(range(1, len(syms)+1), i ->
-              i < len(syms) AND syms[i] = m.a AND syms[i+1] = m.b) AS ml
-          FROM $from))"""
-
-  private def bpeTrainCtes: String = bpeTrainCtesOn("1 = 1", 1024)
-
-  /** The shared frequency-weighted training-vocabulary CTE (`wf`) both
-    * merge trainers consume — split out so x167 can train BPE AND
-    * WordPiece on the SAME slice inside one query (CTE names must be
-    * unique per query — the round-9 collision lesson). */
-  private def bpeWfCte(where: String, topV: Int): String =
-    s"""wf AS MATERIALIZED (
-        SELECT w, CAST(COUNT(*) AS BIGINT) AS f
-        FROM (SELECT unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS w
-              FROM documents WHERE $where)
-        WHERE w <> '' GROUP BY w ORDER BY f DESC, w LIMIT $topV)"""
-
-  /** The 50 unrolled BPE training iterations over `wf` (v0 … v50 with
-    * per-iteration pair counts pc_k and argmax merge m_k). */
-  private def bpeIterCtes: String = {
-    val sb = new StringBuilder
-    sb ++= s"""v0 AS MATERIALIZED (SELECT w, f,
-        list_transform(range(1, length(w)+1), i ->
-          substring(w, CAST(i AS INT), 1)) AS syms FROM wf)"""
-    for (k <- 1 to bpeK) {
-      sb ++= s""",
-      pc$k AS MATERIALIZED (
-        SELECT syms[i] AS a, syms[i+1] AS b, CAST(SUM(f) AS BIGINT) AS cnt
-        FROM v${k - 1}, unnest(range(1, len(syms))) AS t(i) GROUP BY 1, 2),
-      m$k AS MATERIALIZED (SELECT
-        COALESCE((SELECT a FROM pc$k ORDER BY cnt DESC, a, b LIMIT 1), chr(1)) AS a,
-        COALESCE((SELECT b FROM pc$k ORDER BY cnt DESC, a, b LIMIT 1), chr(1)) AS b,
-        COALESCE((SELECT cnt FROM pc$k ORDER BY cnt DESC, a, b LIMIT 1),
-          CAST(0 AS BIGINT)) AS cnt),
-      v$k AS MATERIALIZED (${bpeApplySql(s"v${k - 1}, m$k m")})"""
-    }
-    sb.toString
-  }
-
-  private def bpeTrainCtesOn(where: String, topV: Int): String =
-    bpeWfCte(where, topV) + ",\n      " + bpeIterCtes
-
-  /** x145's WordPiece trainer unrolled: like [[bpeTrainCtes]] but each
-    * iteration also materializes frequency-weighted unit counts and
-    * ranks candidate pairs by the exact HUGEINT floor-quotient
-    * cnt·10¹² / (ca·cb); sentinel/apply contract identical. */
-  private def wpTrainCtes: String =
-    bpeWfCte("1 = 1", 1024) + ",\n      " + wpIterCtes
-
-  /** The 50 unrolled WordPiece iterations over `wf` (y0 … y50, unit
-    * counts yu_k, HUGEINT likelihood argmax ym_k). */
-  private def wpIterCtes: String = {
-    val sb = new StringBuilder
-    sb ++= s"""y0 AS MATERIALIZED (SELECT w, f,
-        list_transform(range(1, length(w)+1), i ->
-          substring(w, CAST(i AS INT), 1)) AS syms FROM wf)"""
-    for (k <- 1 to bpeK) {
-      sb ++= s""",
-      yu$k AS MATERIALIZED (
-        SELECT syms[i] AS s, CAST(SUM(f) AS BIGINT) AS c
-        FROM y${k - 1}, unnest(range(1, len(syms)+1)) AS t(i) GROUP BY 1),
-      yp$k AS MATERIALIZED (
-        SELECT syms[i] AS a, syms[i+1] AS b, CAST(SUM(f) AS BIGINT) AS cnt
-        FROM y${k - 1}, unnest(range(1, len(syms))) AS t(i) GROUP BY 1, 2),
-      ys$k AS MATERIALIZED (
-        SELECT p.a, p.b, p.cnt, ua.c AS ca, ub.c AS cb,
-          CAST(CAST(p.cnt AS HUGEINT) * 1000000000000 //
-            (CAST(ua.c AS HUGEINT) * ub.c) AS BIGINT) AS q
-        FROM yp$k p JOIN yu$k ua ON ua.s = p.a JOIN yu$k ub ON ub.s = p.b),
-      ym$k AS MATERIALIZED (SELECT
-        COALESCE((SELECT a FROM ys$k ORDER BY q DESC, cnt DESC, a, b
-          LIMIT 1), chr(1)) AS a,
-        COALESCE((SELECT b FROM ys$k ORDER BY q DESC, cnt DESC, a, b
-          LIMIT 1), chr(1)) AS b,
-        COALESCE((SELECT cnt FROM ys$k ORDER BY q DESC, cnt DESC, a, b
-          LIMIT 1), CAST(0 AS BIGINT)) AS cnt,
-        COALESCE((SELECT ca FROM ys$k ORDER BY q DESC, cnt DESC, a, b
-          LIMIT 1), CAST(1 AS BIGINT)) AS ca,
-        COALESCE((SELECT cb FROM ys$k ORDER BY q DESC, cnt DESC, a, b
-          LIMIT 1), CAST(1 AS BIGINT)) AS cb,
-        COALESCE((SELECT q FROM ys$k ORDER BY q DESC, cnt DESC, a, b
-          LIMIT 1), CAST(0 AS BIGINT)) AS q),
-      y$k AS MATERIALIZED (${bpeApplySql(s"y${k - 1}, ym$k m")})"""
-    }
-    sb.toString
-  }
-
-  private def ivfOracle(queryPred: String): String = {
-    s"""
-      WITH $ivfAssignedCtes,
-      probes AS (
-        SELECT vec_id AS qid, embedding AS qe, cid AS cell FROM (
-          SELECT e.vec_id, e.embedding, c.cid,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id
-              ORDER BY ROUND(${cosSql("e.embedding", "c.ce")}, 6) DESC, c.cid)
-              AS rk
-          FROM embeddings e, cent2 c WHERE $queryPred)
-        WHERE rk <= 4),
-      scored AS (
-        SELECT p.qid, a.vec_id AS nid,
-          ROUND(${cosSql("p.qe", "a.embedding")}, 4) AS score
-        FROM probes p
-        JOIN assigned a ON a.cell = p.cell AND a.vec_id <> p.qid),
-      ranked AS (
-        SELECT qid, nid, score,
-          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rk
-        FROM scored)
-      SELECT qid, nid, score, CAST(rk AS INT) AS rk FROM ranked
-      WHERE rk <= 10 ORDER BY qid, rk"""
-  }
-
-  private val sqlShingles3 =
+  private[queries] def sqlShingles3: String =
     """list_distinct(list_transform(
          range(1, greatest(len(toks) - 2, 0) + 1),
          i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))"""
-
-  // About the `doc_id % 1000000 < 200` slivers in this oracle family
-  // (round-10 verdict item 3, verified): every occurrence below is the
-  // TWIN of a Scala carrier that slices the SAME 200-base-doc
-  // population by design — x2/x4 (pair-generation reference pins),
-  // x14/x24/x152 (the CC-cluster family: the oracle's transitive
-  // closure is a recursive CTE whose cost explodes past a few hundred
-  // docs), and the simhash/dhash signature rebuilds. These are
-  // crafted sub-population pins, not silent caps; the corpus-wide
-  // dedup paths are x1/x59/x98 (unsliced) and x126 carries the staged
-  // full-corpus winnow store.
-  /** Shared CTE chain for x14/x24: exact Jaccard pairs → undirected
-    * edges → recursive transitive closure → per-doc canonical label. */
-  private lazy val dedupClusterCtes = s"""
-      WITH RECURSIVE corpus AS (
-        SELECT doc_id, text FROM $corpusSql WHERE doc_id % 1000000 < 200),
-      sh AS (
-        SELECT doc_id, unnest($sqlShingles3) AS sh
-        FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-              FROM corpus)),
-      sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-      inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2),
-      p AS (
-        SELECT id_a, id_b
-        FROM inter
-        JOIN (SELECT doc_id AS id_a, n AS na FROM sizes) USING (id_a)
-        JOIN (SELECT doc_id AS id_b, n AS nb FROM sizes) USING (id_b)
-        WHERE ROUND(CAST(inter AS DOUBLE) / (na + nb - inter), 4) >= 0.5),
-      edges2 AS (
-        SELECT id_a AS a, id_b AS b FROM p
-        UNION ALL SELECT id_b, id_a FROM p),
-      reach(a, b) AS (
-        SELECT a, b FROM edges2
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN edges2 e ON r.b = e.a),
-      labels AS (
-        SELECT c.doc_id,
-          LEAST(c.doc_id, COALESCE(m.mn, c.doc_id)) AS canonico
-        FROM corpus c
-        LEFT JOIN (SELECT a, MIN(b) AS mn FROM reach GROUP BY a) m
-          ON c.doc_id = m.a)"""
-
-  private val simhash32Sql: String = {
-    val hex32 = (0 until 8).map { i =>
-      s"(strpos('0123456789abcdef', substring(hx, ${i + 1}, 1)) - 1) * ${1L << (4 * (7 - i))}"
-    }.mkString("(", " + ", ")")
-    val votes = (0 until 32).map(i =>
-      s"SUM(CASE WHEN (h // ${1L << i}) % 2 = 1 THEN 1 ELSE -1 END) AS v$i")
-      .mkString(", ")
-    val assemble = (0 until 32).map(i =>
-      s"CASE WHEN v$i > 0 THEN ${1L << i} ELSE 0 END").mkString(" + ")
-    s"""(SELECT doc_id, CAST($assemble AS BIGINT) AS simhash
-        FROM (
-          SELECT doc_id, $votes
-          FROM (SELECT doc_id, $hex32 AS h
-                FROM (SELECT doc_id, substring(md5(tok), 1, 8) AS hx
-                      FROM (SELECT doc_id,
-                              unnest(list_distinct(
-                                regexp_split_to_array(trim(text), '\\s+'))) AS tok
-                            FROM $corpusSql
-                            WHERE doc_id % 1000000 < 200)))
-          GROUP BY doc_id))"""
-  }
-
-  /** DuckDB rebuild of [[graft.multimodal.Multimodal.dHash64]]: row
-    * i's nine pixels are the first nine bytes of md5(text ∥ ':i')
-    * (DuckDB's md5(VARCHAR) hashes the same UTF-8 bytes the Spark
-    * side digests), each byte from two hex nibbles (the x17 idiom);
-    * bit i·8+j = [px(i,j) > px(i,j+1)], two's-complement assembly as
-    * simhash64Sql. */
-  private val dhashSql: String = {
-    def px(i: Int, j: Int): String = {
-      def nib(p: Int) =
-        s"(strpos('0123456789abcdef', substring(h$i, $p, 1)) - 1)"
-      s"(16 * ${nib(2 * j + 1)} + ${nib(2 * j + 2)})"
-    }
-    val hs = (0 until 8).map(i => s"md5(text || ':$i') AS h$i")
-      .mkString(", ")
-    val bits62 = (for { i <- 0 until 8; j <- 0 until 8; if i * 8 + j < 63 }
-      yield s"CASE WHEN ${px(i, j)} > ${px(i, j + 1)} THEN ${1L << (i * 8 + j)} ELSE 0 END")
-      .mkString(" + ")
-    val bit63 =
-      s"CASE WHEN ${px(7, 7)} > ${px(7, 8)} THEN -9223372036854775807 - 1 ELSE 0 END"
-    s"""(SELECT doc_id, CAST($bits62 + $bit63 AS BIGINT) AS dhash
-         FROM (SELECT doc_id, $hs
-               FROM $corpusSql
-               WHERE doc_id % 1000000 < 200))"""
-  }
-
-  /** 64-bit signatures: per-token hi/lo 32-bit md5-prefix parses vote
-    * separately (bit i<32 from lo, bit i>=32 from hi — avoids any
-    * 64-bit positional arithmetic), then two's-complement assembly:
-    * bits 0..62 sum positively, a set bit 63 contributes -2^63,
-    * landing on the same signed value Spark's bitwise-OR builds. */
-  private val simhash64Sql: String = {
-    def hexVal(start: Int): String = (0 until 8).map { i =>
-      s"(strpos('0123456789abcdef', substring(hx, ${start + i}, 1)) - 1) * ${1L << (4 * (7 - i))}"
-    }.mkString("(", " + ", ")")
-    val votes = ((0 until 32).map(i =>
-      s"SUM(CASE WHEN (lo // ${1L << i}) % 2 = 1 THEN 1 ELSE -1 END) AS v$i") ++
-      (32 until 64).map(i =>
-        s"SUM(CASE WHEN (hi // ${1L << (i - 32)}) % 2 = 1 THEN 1 ELSE -1 END) AS v$i"))
-      .mkString(", ")
-    val asm62 = (0 until 63).map(i =>
-      s"CASE WHEN v$i > 0 THEN ${1L << i} ELSE 0 END").mkString(" + ")
-    s"""(SELECT doc_id, CAST($asm62
-          + CASE WHEN v63 > 0 THEN -9223372036854775807 - 1 ELSE 0 END
-          AS BIGINT) AS simhash
-        FROM (
-          SELECT doc_id, $votes
-          FROM (SELECT doc_id, ${hexVal(1)} AS hi, ${hexVal(9)} AS lo
-                FROM (SELECT doc_id, substring(md5(tok), 1, 16) AS hx
-                      FROM (SELECT doc_id,
-                              unnest(list_distinct(
-                                regexp_split_to_array(trim(text), '\\s+'))) AS tok
-                            FROM $corpusSql
-                            WHERE doc_id % 1000000 < 200)))
-          GROUP BY doc_id))"""
-  }
-
-  /** Shared x22/x29 oracle: the exact incremental-dedup result (the
-    * Bloom path must reproduce it bit-identically). */
-  private lazy val incrementalDedupSql = s"""
-      WITH corpus AS (SELECT doc_id, text FROM $corpusSql),
-      existing AS (SELECT DISTINCT md5(lower(trim(text))) AS fp
-                   FROM corpus WHERE doc_id < 1000000)
-      SELECT doc_id, md5(lower(trim(text))) AS fp
-      FROM corpus
-      WHERE doc_id >= 1000000
-        AND md5(lower(trim(text))) NOT IN (SELECT fp FROM existing)
-      ORDER BY doc_id"""
-
-  /** DuckDB replay of [[piiCorpus]]'s deterministic injection. */
-  private val piiCorpusSql = """
-    (SELECT doc_id, text
-      || CASE WHEN doc_id % 7 = 0
-           THEN ' contato: user' || CAST(doc_id AS VARCHAR) || '@example.com'
-           ELSE '' END
-      || CASE WHEN doc_id % 11 = 0
-           THEN ' fone: (11) 99999-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-           ELSE '' END AS text
-     FROM documents)"""
-
-  /** Shared by x32 (compute-at-query) and x32b (staged-at-ingest):
-    * the two paths must be bit-identical, so one oracle serves both. */
-  private val x32OracleSql = """
-      WITH scored AS (
-        SELECT doc_id, source,
-          ROUND(LEAST(n_tok / 50.0, 1.0) * 0.4
-            + (1.0 - LEAST(punct_ratio * 5.0, 1.0)) * 0.3
-            + LEAST(stop_ratio * 10.0, 1.0) * 0.3, 4) AS quality
-        FROM (
-          SELECT doc_id, source,
-            len(toks) AS n_tok,
-            CAST(length(text) - length(regexp_replace(text, '[^A-Za-z0-9\s]', '', 'g'))
-              AS DOUBLE) / GREATEST(length(text), 1) AS punct_ratio,
-            CAST(len(list_filter(toks, t -> t IN ('the','a','of','and'))) AS DOUBLE)
-              / GREATEST(len(toks), 1) AS stop_ratio
-          FROM (SELECT doc_id, source, text,
-                  regexp_split_to_array(trim(text), '\s+') AS toks
-                FROM documents))),
-      hist AS (
-        SELECT source, quality, COUNT(*) AS c
-        FROM scored GROUP BY source, quality),
-      corte AS (
-        SELECT source, MIN(quality) AS corte FROM (
-          SELECT source, quality,
-            SUM(c) OVER (PARTITION BY source ORDER BY quality) AS cum,
-            SUM(c) OVER (PARTITION BY source) AS n
-          FROM hist)
-        WHERE cum >= CEIL(n * 0.6) GROUP BY source)
-      SELECT s.source, s.doc_id, s.quality, corte.corte
-      FROM scored s JOIN corte ON s.source = corte.source
-      WHERE s.quality > corte.corte
-      ORDER BY s.source, s.doc_id"""
-
-  /** The x83 interpolated-Kneser-Ney scored-table CTE chain, through
-    * `agg` (per-doc step count + 1e-4-quantized log-prob sum) —
-    * shared by the x83 oracle and x113's CCNet percentile buckets. */
-  private val knScoredCtes: String = """
-      WITH ttk AS (SELECT regexp_split_to_array(trim(text), '\s+') AS toks,
-          len(regexp_split_to_array(trim(text), '\s+')) AS n
-        FROM documents WHERE lang = 'en'),
-      tri3 AS (SELECT toks[i-2] AS u, toks[i-1] AS v, toks[i] AS w
-        FROM (SELECT toks, unnest(range(3, n + 1)) AS i
-          FROM ttk WHERE n >= 3)),
-      t3 AS (SELECT u, v, w, CAST(COUNT(*) AS BIGINT) AS c3
-        FROM tri3 GROUP BY u, v, w),
-      ctx3 AS (SELECT u, v, CAST(SUM(c3) AS BIGINT) AS ctx3,
-          CAST(COUNT(*) AS BIGINT) AS n1p_uv FROM t3 GROUP BY u, v),
-      cc2 AS (SELECT v, w, CAST(COUNT(*) AS BIGINT) AS cc2
-        FROM t3 GROUP BY v, w),
-      mid AS (SELECT v, CAST(SUM(cc2) AS BIGINT) AS ccm,
-          CAST(COUNT(*) AS BIGINT) AS n1p_v FROM cc2 GROUP BY v),
-      big2 AS (SELECT a, w, CAST(COUNT(*) AS BIGINT) AS cb
-        FROM (SELECT toks[i-1] AS a, toks[i] AS w
-          FROM (SELECT toks, unnest(range(2, n + 1)) AS i
-            FROM ttk WHERE n >= 2)) GROUP BY a, w),
-      cc1 AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS cc1
-        FROM big2 GROUP BY w),
-      scal AS (SELECT
-          (SELECT CAST(SUM(cc1) AS BIGINT) FROM cc1) AS tt,
-          (SELECT CAST(COUNT(*) AS BIGINT) FROM cc1) AS v1,
-          (SELECT CAST(COUNT(DISTINCT tok) AS BIGINT)
-            FROM (SELECT unnest(toks) AS tok FROM ttk)) AS vocab),
-      steps AS (SELECT doc_id, toks[i-2] AS u, toks[i-1] AS v,
-          toks[i] AS w
-        FROM (SELECT doc_id, toks, unnest(range(3, len(toks) + 1)) AS i
-          FROM (SELECT doc_id,
-              regexp_split_to_array(trim(text), '\s+') AS toks
-            FROM documents)
-          WHERE len(toks) >= 3)),
-      j AS (SELECT s.doc_id, t3.c3, x.ctx3, x.n1p_uv, cc2.cc2,
-          mid.ccm, mid.n1p_v, cc1.cc1, scal.tt, scal.v1, scal.vocab
-        FROM steps s
-        LEFT JOIN t3 ON t3.u = s.u AND t3.v = s.v AND t3.w = s.w
-        LEFT JOIN ctx3 x ON x.u = s.u AND x.v = s.v
-        LEFT JOIN cc2 ON cc2.v = s.v AND cc2.w = s.w
-        LEFT JOIN mid ON mid.v = s.v
-        LEFT JOIN cc1 ON cc1.w = s.w
-        CROSS JOIN scal),
-      p AS (SELECT doc_id,
-          CAST(greatest(COALESCE(cc1, 0) * 4 - 3, 0) * (vocab + 1)
-            + v1 * 3 AS DOUBLE)
-            / CAST(tt * (vocab + 1) * 4 AS DOUBLE) AS p1,
-          c3, ctx3, n1p_uv, cc2, ccm, n1p_v FROM j),
-      p2t AS (SELECT doc_id, c3, ctx3, n1p_uv,
-          CASE WHEN ccm IS NOT NULL THEN
-            (CAST(greatest(COALESCE(cc2, 0) * 4 - 3, 0) AS DOUBLE)
-              + CAST(n1p_v * 3 AS DOUBLE) * p1)
-              / CAST(ccm * 4 AS DOUBLE)
-          ELSE p1 END AS p2 FROM p),
-      p3t AS (SELECT doc_id,
-          CASE WHEN ctx3 IS NOT NULL THEN
-            (CAST(greatest(COALESCE(c3, 0) * 4 - 3, 0) AS DOUBLE)
-              + CAST(n1p_uv * 3 AS DOUBLE) * p2)
-              / CAST(ctx3 * 4 AS DOUBLE)
-          ELSE p2 END AS p3 FROM p2t),
-      sc AS (SELECT doc_id,
-          CAST(ROUND(-LN(p3) * 1e4, 0) AS BIGINT) AS lp_q FROM p3t),
-      agg AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_steps,
-          CAST(SUM(lp_q) AS BIGINT) AS s_lp
-        FROM sc GROUP BY doc_id)"""
-
-  /** MATERIALIZED DuckDB mirrors of [[pqAssignSql]]/[[pqCentSql]] for
-    * the long OPQ chains (the inline-expansion guard). */
-  private def opqAssignSql(sub: String, cents: String, out: String) = s"""
-      $out AS MATERIALIZED (SELECT vec_id, m, cell, sub FROM (
-        SELECT s.vec_id, s.m, c.cid AS cell, s.sub,
-          ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
-            ORDER BY CAST(ROUND(${pqL2Sql("s.sub", "c.ce")} * 1e6, 0) AS BIGINT),
-              c.cid) AS rk
-        FROM $sub s JOIN $cents c ON c.m = s.m) WHERE rk = 1)"""
-
-  private def opqCentSql(assigned: String, out: String) = s"""
-      $out AS MATERIALIZED (SELECT m, cell AS cid,
-        list(CAST(CAST(sv AS DOUBLE) / (CAST(n AS DOUBLE) * 16777216)
-          AS FLOAT) ORDER BY pos) AS ce
-      FROM (
-        SELECT m, cell, i AS pos,
-          CAST(SUM(CAST(FLOOR(CAST(sub[i] AS DOUBLE) * 16777216)
-            AS BIGINT)) AS BIGINT) AS sv,
-          COUNT(*) AS n
-        FROM $assigned, UNNEST(range(1, len(sub) + 1)) AS t(i)
-        GROUP BY m, cell, i)
-      GROUP BY m, cell)"""
-
-  /** The parametric-OPQ rotation as DuckDB CTEs, ending in
-    * `re(vec_id, embedding)` — the rotated corpus: x65's covariance
-    * CTEs (mat0) → 64 unrolled power-iteration + deflation blocks
-    * (bit-exact vs the [[graft.ml.Opq]] driver replica — prototype-
-    * verified over all 4160 values) → the eigenvalue-allocation
-    * recursion → the rotation. Shared by the x99b audit and x114's
-    * composed serving oracle; MATERIALIZED throughout keeps the
-    * chain linear. */
-  private def opqRotationCtes: String = {
-    val eig = new StringBuilder
-    for (c <- 0 until 64) eig ++= s""",
-      it$c(k, v) AS (
-        SELECT 0, list_transform(m[1], x -> CAST(1.0 AS DOUBLE)) FROM mat$c
-        UNION ALL
-        SELECT k + 1, list_transform(w, x ->
-            x / list_max(list_transform(w, y -> abs(y))))
-        FROM (SELECT k, list_transform(range(1, len(m) + 1), i ->
-            list_sum(list_transform(list_zip(m[i], v), p -> p[1] * p[2]))) AS w
-          FROM it$c, mat$c WHERE k < 50)),
-      uvec$c AS MATERIALIZED (SELECT list_transform(v, x ->
-          x / sqrt(list_sum(list_transform(v, y -> y * y)))) AS u
-        FROM it$c WHERE k = 50),
-      lamt$c AS MATERIALIZED (SELECT
-          list_sum(list_transform(list_zip(u, w), p -> p[1] * p[2])) AS lam
-        FROM (SELECT u, list_transform(range(1, len(m) + 1), i ->
-            list_sum(list_transform(list_zip(m[i], u), p -> p[1] * p[2]))) AS w
-          FROM uvec$c, mat$c)),
-      mat${c + 1} AS MATERIALIZED (
-        SELECT list_transform(range(1, len(m) + 1), i ->
-            list_transform(range(1, len(m) + 1), j ->
-              m[i][j] - lam * u[i] * u[j])) AS m
-        FROM mat$c, uvec$c, lamt$c)"""
-    val lamUnion = (0 until 64).map(c =>
-      s"SELECT $c AS c, (SELECT lam FROM lamt$c) AS lam FROM uvec$c")
-      .mkString(" UNION ALL ")
-    val uUnion = (0 until 64).map(c => s"SELECT $c AS c, u FROM uvec$c")
-      .mkString(" UNION ALL ")
-    s"""WITH RECURSIVE d1 AS (SELECT vec_id, embedding,
-          unnest(range(0, len(embedding))) AS i,
-          unnest(embedding) AS xi
-        FROM embeddings),
-      q1 AS (SELECT vec_id, embedding, i,
-          CAST(ROUND(CAST(xi AS DOUBLE) * 1e6, 0) AS BIGINT) AS qi FROM d1),
-      d2 AS (SELECT i, qi,
-          unnest(range(0, len(embedding))) AS j,
-          unnest(embedding) AS xj
-        FROM q1),
-      p2 AS (SELECT i, j, qi,
-          CAST(ROUND(CAST(xj AS DOUBLE) * 1e6, 0) AS BIGINT) AS qj
-        FROM d2 WHERE j >= i),
-      cells AS MATERIALIZED (SELECT i, j,
-          CAST(SUM(CAST(qi AS HUGEINT) * qj) AS HUGEINT) AS p,
-          CAST(SUM(CASE WHEN j = i THEN qi END) AS BIGINT) AS s_diag
-        FROM p2 GROUP BY i, j),
-      nn AS (SELECT COUNT(*) AS n FROM embeddings),
-      sums AS (SELECT i AS d_, s_diag AS s_ FROM cells WHERE j = i),
-      covq AS (SELECT cells.i, cells.j,
-          CAST((CASE WHEN CAST(nn.n AS HUGEINT) * p
-              - CAST(si.s_ AS HUGEINT) * sj.s_ < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(CAST(nn.n AS HUGEINT) * p
-                - CAST(si.s_ AS HUGEINT) * sj.s_)
-              + CAST(nn.n AS HUGEINT) * nn.n * 10000)
-              // (2 * (CAST(nn.n AS HUGEINT) * nn.n * 10000)))
-            AS DOUBLE) / 1e8 AS cov
-        FROM cells
-        JOIN sums si ON si.d_ = cells.i
-        JOIN sums sj ON sj.d_ = cells.j
-        CROSS JOIN nn),
-      full_m AS (SELECT i, j, cov FROM covq
-        UNION ALL SELECT j AS i, i AS j, cov FROM covq WHERE i < j),
-      rows_m AS (SELECT i, list(cov ORDER BY j) AS r FROM full_m GROUP BY i),
-      mat0 AS MATERIALIZED (SELECT list(r ORDER BY i) AS m FROM rows_m)
-      $eig,
-      lams AS MATERIALIZED ($lamUnion),
-      ulist AS MATERIALIZED ($uUnion),
-      es AS MATERIALIZED (SELECT
-        list(STRUCT_PACK(e := c, lam := lam) ORDER BY lam DESC, c) AS es
-        FROM lams),
-      alloc(k, asg, prods, cnts) AS (
-        SELECT 0, CAST([] AS BIGINT[]),
-          CAST([1.0, 1.0, 1.0, 1.0, 1.0, 1.0, 1.0, 1.0] AS DOUBLE[]),
-          CAST([0, 0, 0, 0, 0, 0, 0, 0] AS BIGINT[])
-        UNION ALL
-        SELECT k + 1,
-          list_append(asg, g),
-          list_transform(range(1, 9), i ->
-            CASE WHEN i = g THEN prods[i] * es[k + 1].lam ELSE prods[i] END),
-          list_transform(range(1, 9), i ->
-            CASE WHEN i = g THEN cnts[i] + 1 ELSE cnts[i] END)
-        FROM (
-          SELECT k, asg, prods, cnts, es,
-            list_position(elig, list_min(elig)) AS g
-          FROM (SELECT k, asg, prods, cnts, es,
-              list_transform(range(1, 9), i ->
-                CASE WHEN cnts[i] < 8 THEN prods[i] END) AS elig
-            FROM alloc, es WHERE k < 64))),
-      af AS MATERIALIZED (SELECT asg FROM alloc WHERE k = 64),
-      rotmap AS MATERIALIZED (
-        SELECT ROW_NUMBER() OVER (ORDER BY b, r) AS o, e FROM (
-          SELECT r, asg[r] AS b, es[r].e AS e
-          FROM af, es, unnest(range(1, 65)) AS t(r))),
-      rot AS MATERIALIZED (SELECT o, u
-        FROM rotmap JOIN ulist ON ulist.c = rotmap.e),
-      re AS MATERIALIZED (
-        SELECT e.vec_id,
-          list(list_sum(list_transform(list_zip(e.embedding, rot.u),
-            p -> CAST(p[1] AS DOUBLE) * p[2])) ORDER BY rot.o) AS embedding
-        FROM embeddings e CROSS JOIN rot GROUP BY e.vec_id)"""
-  }
-
-  /** Shared DuckDB generator for the trained-classifier oracles
-    * (x108/x118): feature build + 20 unrolled logistic-GD iterations,
-    * ending at CTE `w20` (the trained weight list) with the sparse
-    * feature table still in scope as `tf`. x118 proves the STAGED
-    * weight store against this from-scratch retrain — the x98
-    * staged-read contract applied to the model registry. */
-  private def clfTrainedSql: String = {
-    val iters = new StringBuilder
-    for (k <- 1 to 20) iters ++= s""",
-      z$k AS MATERIALIZED (SELECT doc_id, y,
-          CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
-            AS BIGINT) AS zq
-        FROM tf, w${k - 1} GROUP BY doc_id, y),
-      g$k AS MATERIALIZED (SELECT t.bucket,
-          CAST(SUM(CAST(ROUND((CAST(CAST(ROUND((1 / (1
-            + exp(-(CAST(z.zq AS DOUBLE) / 1e9)))) * 1e6, 0) AS BIGINT)
-            AS DOUBLE) / 1e6 - z.y) * t.x * 1e6, 0) AS BIGINT)) AS BIGINT)
-            AS gq
-        FROM tf t JOIN z$k z USING (doc_id) GROUP BY t.bucket),
-      gl$k AS MATERIALIZED (SELECT
-          list(COALESCE(g.gq, CAST(0 AS BIGINT)) ORDER BY t.b) AS gl
-        FROM range(0, 68) t(b) LEFT JOIN g$k g ON g.bucket = t.b),
-      w$k AS MATERIALIZED (SELECT list_transform(range(1, 69),
-          i -> w[i] - 16.0 * ((CAST(gl[i] AS DOUBLE) / 1e6)
-            / CAST(nn.n AS DOUBLE))) AS w
-        FROM w${k - 1}, gl$k, nn)"""
-    s"""WITH tfc AS (SELECT doc_id, bucket, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM (SELECT doc_id, (${md5Hash32Sql("w")}) % 64 AS bucket
-          FROM (SELECT doc_id,
-              unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS w
-            FROM documents)
-          WHERE w <> '') GROUP BY 1, 2),
-      ntok AS (SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n_tok
-        FROM tfc GROUP BY doc_id),
-      feat AS (SELECT doc_id,
-          LEAST(len(regexp_split_to_array(trim(text), '\\s+')) / 50.0, 1.0)
-            AS f_len,
-          1.0 - LEAST((CAST(length(text)
-              - length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g'))
-            AS DOUBLE) / GREATEST(length(text), 1)) * 5.0, 1.0) AS f_punct,
-          LEAST((CAST(len(list_filter(
-              regexp_split_to_array(trim(text), '\\s+'),
-              t -> t IN ('the', 'a', 'of', 'and'))) AS DOUBLE)
-            / GREATEST(len(regexp_split_to_array(trim(text), '\\s+')), 1))
-            * 10.0, 1.0) AS f_stop
-        FROM documents),
-      lab AS (SELECT doc_id,
-          CASE WHEN ROUND(f_len * 0.4 + f_punct * 0.3 + f_stop * 0.3, 4)
-            >= 0.5 THEN 1 ELSE 0 END AS y,
-          f_len, f_punct, f_stop
-        FROM feat),
-      tf AS (
-        SELECT t.doc_id, l.y, t.bucket,
-          CAST(t.cnt AS DOUBLE) / CAST(n.n_tok AS DOUBLE) AS x
-        FROM tfc t JOIN ntok n USING (doc_id) JOIN lab l USING (doc_id)
-        UNION ALL SELECT n.doc_id, l.y, 64, l.f_len
-          FROM ntok n JOIN lab l USING (doc_id)
-        UNION ALL SELECT n.doc_id, l.y, 65, l.f_punct
-          FROM ntok n JOIN lab l USING (doc_id)
-        UNION ALL SELECT n.doc_id, l.y, 66, l.f_stop
-          FROM ntok n JOIN lab l USING (doc_id)
-        UNION ALL SELECT n.doc_id, l.y, 67, 1.0
-          FROM ntok n JOIN lab l USING (doc_id)),
-      nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM ntok),
-      w0 AS (SELECT list_transform(range(0, 68),
-        b -> CAST(0.0 AS DOUBLE)) AS w)
-      $iters"""
-  }
-
-  /** x175's trainer unroll: [[clfTrainedSql]]'s exact iteration
-    * template (same tfc/ntok/feat CTEs, same 20 z/g/gl/w steps) with
-    * the LABEL swapped to the early/late-half indicator and the
-    * training relation restricted to the md5-balde train split —
-    * `tfall` (all docs, C2ST labels) is exposed for the held-out
-    * scoring stage. */
-  private def c2stTrainedSql: String = {
-    val iters = new StringBuilder
-    for (k <- 1 to 20) iters ++= s""",
-      z$k AS MATERIALIZED (SELECT doc_id, y,
-          CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
-            AS BIGINT) AS zq
-        FROM tf, w${k - 1} GROUP BY doc_id, y),
-      g$k AS MATERIALIZED (SELECT t.bucket,
-          CAST(SUM(CAST(ROUND((CAST(CAST(ROUND((1 / (1
-            + exp(-(CAST(z.zq AS DOUBLE) / 1e9)))) * 1e6, 0) AS BIGINT)
-            AS DOUBLE) / 1e6 - z.y) * t.x * 1e6, 0) AS BIGINT)) AS BIGINT)
-            AS gq
-        FROM tf t JOIN z$k z USING (doc_id) GROUP BY t.bucket),
-      gl$k AS MATERIALIZED (SELECT
-          list(COALESCE(g.gq, CAST(0 AS BIGINT)) ORDER BY t.b) AS gl
-        FROM range(0, 68) t(b) LEFT JOIN g$k g ON g.bucket = t.b),
-      w$k AS MATERIALIZED (SELECT list_transform(range(1, 69),
-          i -> w[i] - 16.0 * ((CAST(gl[i] AS DOUBLE) / 1e6)
-            / CAST(nn.n AS DOUBLE))) AS w
-        FROM w${k - 1}, gl$k, nn)"""
-    s"""WITH tfc AS (SELECT doc_id, bucket, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM (SELECT doc_id, (${md5Hash32Sql("w")}) % 64 AS bucket
-          FROM (SELECT doc_id,
-              unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS w
-            FROM documents)
-          WHERE w <> '') GROUP BY 1, 2),
-      ntok AS (SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n_tok
-        FROM tfc GROUP BY doc_id),
-      feat AS (SELECT doc_id,
-          LEAST(len(regexp_split_to_array(trim(text), '\\s+')) / 50.0, 1.0)
-            AS f_len,
-          1.0 - LEAST((CAST(length(text)
-              - length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g'))
-            AS DOUBLE) / GREATEST(length(text), 1)) * 5.0, 1.0) AS f_punct,
-          LEAST((CAST(len(list_filter(
-              regexp_split_to_array(trim(text), '\\s+'),
-              t -> t IN ('the', 'a', 'of', 'and'))) AS DOUBLE)
-            / GREATEST(len(regexp_split_to_array(trim(text), '\\s+')), 1))
-            * 10.0, 1.0) AS f_stop
-        FROM documents),
-      spl AS (SELECT (MAX(doc_id) + 1) // 2 AS sp FROM documents),
-      lab2 AS (SELECT doc_id,
-          CASE WHEN doc_id >= sp THEN 1 ELSE 0 END AS y
-        FROM documents, spl),
-      tfall AS (
-        SELECT t.doc_id, l.y, t.bucket,
-          CAST(t.cnt AS DOUBLE) / CAST(n.n_tok AS DOUBLE) AS x
-        FROM tfc t JOIN ntok n USING (doc_id) JOIN lab2 l USING (doc_id)
-        UNION ALL SELECT n.doc_id, l.y, 64, f.f_len
-          FROM ntok n JOIN lab2 l USING (doc_id) JOIN feat f USING (doc_id)
-        UNION ALL SELECT n.doc_id, l.y, 65, f.f_punct
-          FROM ntok n JOIN lab2 l USING (doc_id) JOIN feat f USING (doc_id)
-        UNION ALL SELECT n.doc_id, l.y, 66, f.f_stop
-          FROM ntok n JOIN lab2 l USING (doc_id) JOIN feat f USING (doc_id)
-        UNION ALL SELECT n.doc_id, l.y, 67, 1.0
-          FROM ntok n JOIN lab2 l USING (doc_id)),
-      tf AS (SELECT * FROM tfall
-        WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
-          % 100 < 90),
-      nn AS (SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n FROM tf),
-      w0 AS (SELECT list_transform(range(0, 68),
-        b -> CAST(0.0 AS DOUBLE)) AS w)
-      $iters"""
-  }
-
-  val oracles: Map[String, String] = Map(
-    "x108_quality_classifier" -> s"""$clfTrainedSql
-      SELECT b AS bucket, ROUND(w[b + 1], 6) AS weight
-      FROM w20, range(0, 68) t(b) ORDER BY bucket""",
-    "x144_filter_attribution" -> """
-      WITH t AS (SELECT doc_id, lang, text,
-          regexp_split_to_array(trim(text), '\s+') AS toks,
-          list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-            w -> w <> '') AS ltoks
-        FROM documents),
-      fl AS (SELECT
-          CASE WHEN lang <> 'en' THEN 1 ELSE 0 END AS f1,
-          CASE WHEN len(toks) < 10 THEN 1 ELSE 0 END AS f2,
-          CASE WHEN ROUND(LEAST(len(toks) / 50.0, 1.0) * 0.4
-              + (1.0 - LEAST(CAST(length(text) - length(regexp_replace(text,
-                    '[^A-Za-z0-9\s]', '', 'g')) AS DOUBLE)
-                  / GREATEST(length(text), 1) * 5.0, 1.0)) * 0.3
-              + LEAST(CAST(len(list_filter(toks,
-                    t2 -> t2 IN ('the', 'a', 'of', 'and'))) AS DOUBLE)
-                  / GREATEST(len(toks), 1) * 10.0, 1.0) * 0.3, 4) < 0.5
-            THEN 1 ELSE 0 END AS f3,
-          CASE WHEN CAST(length(text) - length(regexp_replace(text,
-                '[^A-Za-z0-9\s]', '', 'g')) AS DOUBLE)
-              / GREATEST(length(text), 1) > 0.1 THEN 1 ELSE 0 END AS f4,
-          CASE WHEN len(list_filter(ltoks,
-              w -> w IN ('slow', 'dup', 'hash'))) > 0 THEN 1 ELSE 0 END AS f5
-        FROM t),
-      f2l AS (SELECT *, f1 + f2 + f3 + f4 + f5 AS nf FROM fl),
-      ag AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-          CAST(SUM(CASE WHEN nf > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_any,
-          CAST(SUM(f1) AS BIGINT) AS nf1, CAST(SUM(CASE WHEN f1 = 1
-            AND nf = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nu1,
-          CAST(SUM(f2) AS BIGINT) AS nf2, CAST(SUM(CASE WHEN f2 = 1
-            AND nf = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nu2,
-          CAST(SUM(f3) AS BIGINT) AS nf3, CAST(SUM(CASE WHEN f3 = 1
-            AND nf = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nu3,
-          CAST(SUM(f4) AS BIGINT) AS nf4, CAST(SUM(CASE WHEN f4 = 1
-            AND nf = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nu4,
-          CAST(SUM(f5) AS BIGINT) AS nf5, CAST(SUM(CASE WHEN f5 = 1
-            AND nf = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nu5
-        FROM f2l),
-      st AS (
-        SELECT 1 AS ordem, 'lang' AS rule, n_docs, nf1 AS n_fail,
-          nu1 AS n_unique FROM ag
-        UNION ALL SELECT 2, 'min_len', n_docs, nf2, nu2 FROM ag
-        UNION ALL SELECT 3, 'quality', n_docs, nf3, nu3 FROM ag
-        UNION ALL SELECT 4, 'punct', n_docs, nf4, nu4 FROM ag
-        UNION ALL SELECT 5, 'blocklist', n_docs, nf5, nu5 FROM ag
-        UNION ALL SELECT 6, 'any', n_docs, n_any, CAST(NULL AS BIGINT)
-          FROM ag)
-      SELECT ordem, rule, n_docs, n_fail,
-        CAST(((2 * n_fail * 10000 + n_docs) // (2 * n_docs)) AS DOUBLE)
-          / 1e4 AS fail_rate,
-        n_unique,
-        CASE WHEN n_unique IS NOT NULL THEN
-          CAST(((2 * n_unique * 10000 + n_docs) // (2 * n_docs)) AS DOUBLE)
-            / 1e4 END AS unique_share
-      FROM st ORDER BY ordem""",
-    "x146_kcenter_coreset" -> {
-      // every step CTE is MATERIALIZED: un-materialized, c$k inlines
-      // c${k-1} three times over and each copy bottoms out in the
-      // full Lloyd chain — the exponential inline-expansion trap
-      val sb = new StringBuilder
-      sb ++= s"""WITH $ivfAssignedCtes,
-        dm AS MATERIALIZED (
-          SELECT a.cid AS ca, b.cid AS cb,
-            CASE WHEN a.cid = b.cid THEN 0.0
-                 ELSE ROUND(1 - ${cosSql("a.ce", "b.ce")}, 6) END AS d
-          FROM cent2 a, cent2 b),
-        ids AS MATERIALIZED (SELECT DISTINCT ca AS cid FROM dm),
-        p1 AS MATERIALIZED (SELECT MIN(cid) AS cid FROM ids),
-        c1 AS MATERIALIZED (SELECT cid FROM p1)"""
-      for (k <- 2 to 6) sb ++= s""",
-        m$k AS MATERIALIZED (SELECT c.cid, MIN(d.d) AS md
-          FROM ids c JOIN dm d ON d.ca = c.cid
-          JOIN c${k - 1} p ON d.cb = p.cid
-          WHERE c.cid NOT IN (SELECT cid FROM c${k - 1})
-          GROUP BY c.cid),
-        p$k AS MATERIALIZED (
-          SELECT cid FROM m$k ORDER BY md DESC, cid LIMIT 1),
-        c$k AS MATERIALIZED (
-          SELECT cid FROM c${k - 1} UNION ALL SELECT cid FROM p$k)"""
-      for (k <- 1 to 6) sb ++= s""",
-        r$k AS MATERIALIZED (SELECT MAX(md) AS r FROM (
-          SELECT c.cid, MIN(d.d) AS md FROM ids c
-          JOIN dm d ON d.ca = c.cid JOIN c$k p ON d.cb = p.cid
-          GROUP BY c.cid))"""
-      val union = (1 to 6).map(k =>
-        s"""SELECT CAST($k AS BIGINT) AS step, p$k.cid AS cid,
-            r$k.r AS radius FROM p$k, r$k""").mkString(" UNION ALL ")
-      sb.toString + s" SELECT * FROM ($union) ORDER BY step"
-    },
-    "x149_rholoss_select" -> """
-      WITH dd AS (SELECT doc_id, source, text,
-          ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % 100
-            AS b
-        FROM documents),
-      pool AS (SELECT doc_id, source, text FROM dd WHERE b >= 90),
-      tr AS (SELECT regexp_split_to_array(trim(text), '\s+') AS toks
-        FROM dd WHERE b < 90),
-      ptok AS (
-        SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+'))
-          AS token
-        FROM pool),
-      cnt AS (SELECT token, COUNT(*) AS c FROM ptok GROUP BY token),
-      tot AS (SELECT COUNT(*) AS n FROM ptok),
-      uagg AS (SELECT doc_id,
-          CAST(COUNT(*) AS BIGINT) AS n_tok,
-          CAST(SUM(CAST(ROUND(-LN(CAST(c AS DOUBLE) / n) * 1e4, 0)
-            AS BIGINT)) AS BIGINT) AS s1
-        FROM ptok JOIN cnt USING (token) CROSS JOIN tot
-        GROUP BY doc_id),
-      u AS (SELECT doc_id,
-          (CASE WHEN s1 < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(s1) + n_tok) // (2 * n_tok)) AS u_q
-        FROM uagg),
-      uni AS (SELECT w1, CAST(COUNT(*) AS BIGINT) AS c1
-              FROM (SELECT unnest(toks) AS w1 FROM tr) GROUP BY w1),
-      vv AS (SELECT CAST(COUNT(*) + 1 AS BIGINT) AS v FROM uni),
-      cnt2 AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS c2 FROM (
-          SELECT unnest(list_transform(range(1, greatest(len(toks) - 1, 0)
-            + 1), i -> toks[i] || ' ' || toks[i+1])) AS g FROM tr)
-        GROUP BY g),
-      pbi AS (SELECT doc_id, g, split_part(g, ' ', 1) AS w1 FROM (
-          SELECT doc_id,
-            unnest(list_transform(range(1, greatest(len(toks) - 1, 0)
-              + 1), i -> toks[i] || ' ' || toks[i+1])) AS g
-          FROM (SELECT doc_id,
-              regexp_split_to_array(trim(text), '\s+') AS toks
-            FROM pool))),
-      ragg AS (SELECT p.doc_id, CAST(COUNT(*) AS BIGINT) AS nb,
-          CAST(SUM(CAST(ROUND(-LN(
-            (CAST(COALESCE(c2, 0) AS DOUBLE) + 1.0)
-            / (CAST(COALESCE(c1, 0) AS DOUBLE) + CAST(v AS DOUBLE)))
-            * 1e4, 0) AS BIGINT)) AS BIGINT) AS s2
-        FROM pbi p LEFT JOIN cnt2 USING (g) LEFT JOIN uni USING (w1)
-        CROSS JOIN vv GROUP BY p.doc_id),
-      r AS (SELECT doc_id,
-          (CASE WHEN s2 < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(s2) + nb) // (2 * nb)) AS r_q
-        FROM ragg),
-      sc AS MATERIALIZED (
-        SELECT d.source, u.doc_id, u.u_q - r.r_q AS red_q
-        FROM u JOIN r USING (doc_id) JOIN pool d USING (doc_id)),
-      hist AS (SELECT red_q, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM sc GROUP BY red_q),
-      cum AS (SELECT red_q, SUM(cnt) OVER (ORDER BY red_q) AS cum
-        FROM hist),
-      nn2 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM sc),
-      cut AS (SELECT MIN(red_q) AS cut90 FROM cum, nn2
-        WHERE cum * 10 >= n * 9),
-      ag AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-          CAST(SUM(CASE WHEN red_q > cut90 THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_sel,
-          CAST(SUM(red_q) AS BIGINT) AS sum_red,
-          CAST(SUM(CASE WHEN red_q > cut90 THEN red_q ELSE 0 END)
-            AS BIGINT) AS sum_red_sel
-        FROM sc, cut GROUP BY source)
-      SELECT source, n_docs, n_sel,
-        CAST(((2 * n_sel * 10000 + n_docs) // (2 * n_docs)) AS DOUBLE)
-          / 1e4 AS sel_rate,
-        CAST((CASE WHEN sum_red < 0 THEN -1 ELSE 1 END)
-          * ((2 * abs(sum_red) + n_docs) // (2 * n_docs)) AS DOUBLE) / 1e4
-          AS mean_red,
-        CASE WHEN n_sel > 0 THEN
-          CAST((CASE WHEN sum_red_sel < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(sum_red_sel) + n_sel) // (2 * n_sel)) AS DOUBLE)
-            / 1e4 END AS mean_red_sel
-      FROM ag ORDER BY source""",
-    "x148_margin_mining" -> s"""
-      WITH $ivfAssignedCtes,
-      aa AS (SELECT cell, vec_id AS qid, embedding AS ea
-        FROM assigned WHERE vec_id % 2 = 0),
-      bb AS (SELECT cell, vec_id AS match_id, embedding AS eb
-        FROM assigned WHERE vec_id % 2 = 1),
-      cand AS MATERIALIZED (
-        SELECT qid, match_id, cu FROM (
-          SELECT qid, match_id,
-            CAST(ROUND(${cosSql("ea", "eb")} * 1e4, 0) AS BIGINT) AS cu
-          FROM aa JOIN bb USING (cell))
-        WHERE cu > 0),
-      asums AS (SELECT qid, CAST(SUM(cu) AS BIGINT) AS sum_a,
-          CAST(COUNT(*) AS BIGINT) AS na
-        FROM (SELECT qid, cu, ROW_NUMBER() OVER (PARTITION BY qid
-            ORDER BY cu DESC, match_id) AS rk FROM cand)
-        WHERE rk <= 4 GROUP BY qid),
-      bsums AS (SELECT match_id, CAST(SUM(cu) AS BIGINT) AS sum_b,
-          CAST(COUNT(*) AS BIGINT) AS nb
-        FROM (SELECT match_id, cu, ROW_NUMBER() OVER (PARTITION BY
-            match_id ORDER BY cu DESC, qid) AS rk FROM cand)
-        WHERE rk <= 4 GROUP BY match_id),
-      scored AS (SELECT qid, match_id, cu,
-          ((2 * num + den) // (2 * den)) AS margin_q
-        FROM (SELECT c.qid, c.match_id, c.cu,
-            2 * c.cu * a.na * b.nb * 10000 AS num,
-            a.sum_a * b.nb + b.sum_b * a.na AS den
-          FROM cand c JOIN asums a USING (qid)
-          JOIN bsums b USING (match_id))),
-      best AS (SELECT qid, match_id, cu, margin_q,
-          ROW_NUMBER() OVER (PARTITION BY qid
-            ORDER BY margin_q DESC, cu DESC, match_id) AS rk
-        FROM scored)
-      SELECT qid, match_id, CAST(cu AS DOUBLE) / 1e4 AS cos,
-        CAST(margin_q AS DOUBLE) / 1e4 AS margin,
-        margin_q >= 10500 AS accepted
-      FROM best WHERE rk = 1 ORDER BY qid""",
-    "x147_k_anonymity" -> """
-      WITH cls AS (
-        SELECT source, lang,
-          LEAST(len(regexp_split_to_array(trim(text), '\s+')) // 16, 8)
-            AS len_band,
-          CAST(COUNT(*) AS BIGINT) AS n
-        FROM documents GROUP BY 1, 2, 3),
-      ks AS (SELECT unnest([2, 5, 10, 20]) AS k),
-      ag AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS n_classes,
-          CAST(SUM(CASE WHEN n < k THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_classes_risk,
-          CAST(SUM(CASE WHEN n < k THEN n ELSE 0 END) AS BIGINT)
-            AS n_docs_risk,
-          CAST(SUM(n) AS BIGINT) AS n_docs
-        FROM cls, ks GROUP BY k)
-      SELECT CAST(k AS BIGINT) AS k, n_classes, n_classes_risk,
-        n_docs_risk,
-        CAST(((2 * n_docs_risk * 10000 + n_docs) // (2 * n_docs))
-          AS DOUBLE) / 1e4 AS risk_share
-      FROM ag ORDER BY k""",
-    "x143_vendi_diversity" -> {
-      // x65/x99b's power-iteration + deflation chains over the 10×10
-      // label-centroid Gram (mat0) — structure copied verbatim from
-      // opqRotationCtes so driver and oracle run the same approximation
-      val eig = new StringBuilder
-      for (c <- 0 until 10) eig ++= s""",
-      it$c(k, v) AS (
-        SELECT 0, list_transform(m[1], x -> CAST(1.0 AS DOUBLE)) FROM mat$c
-        UNION ALL
-        SELECT k + 1, list_transform(w, x ->
-            x / list_max(list_transform(w, y -> abs(y))))
-        FROM (SELECT k, list_transform(range(1, len(m) + 1), i ->
-            list_sum(list_transform(list_zip(m[i], v), p -> p[1] * p[2]))) AS w
-          FROM it$c, mat$c WHERE k < 50)),
-      uvec$c AS MATERIALIZED (SELECT list_transform(v, x ->
-          x / sqrt(list_sum(list_transform(v, y -> y * y)))) AS u
-        FROM it$c WHERE k = 50),
-      lamt$c AS MATERIALIZED (SELECT
-          list_sum(list_transform(list_zip(u, w), p -> p[1] * p[2])) AS lam
-        FROM (SELECT u, list_transform(range(1, len(m) + 1), i ->
-            list_sum(list_transform(list_zip(m[i], u), p -> p[1] * p[2]))) AS w
-          FROM uvec$c, mat$c)),
-      mat${c + 1} AS MATERIALIZED (
-        SELECT list_transform(range(1, len(m) + 1), i ->
-            list_transform(range(1, len(m) + 1), j ->
-              m[i][j] - lam * u[i] * u[j])) AS m
-        FROM mat$c, uvec$c, lamt$c)"""
-      val lamUnion = (0 until 10).map(c =>
-        s"SELECT $c AS c, (SELECT lam FROM lamt$c) AS lam FROM uvec$c")
-        .mkString(" UNION ALL ")
-      s"""WITH RECURSIVE d1 AS (SELECT label,
-          unnest(range(0, len(embedding))) AS pos,
-          unnest(embedding) AS v
-        FROM embeddings),
-      cen AS MATERIALIZED (SELECT label, pos,
-          SUM(FLOOR(CAST(v AS DOUBLE) * 16777216)) AS sv, COUNT(*) AS n
-        FROM d1 GROUP BY label, pos),
-      cmp AS (SELECT label, pos,
-          CAST(sv AS DOUBLE) / (CAST(n AS DOUBLE) * 16777216) AS comp
-        FROM cen),
-      rl AS MATERIALIZED (SELECT label, list(comp ORDER BY pos) AS r
-        FROM cmp GROUP BY label),
-      nr AS MATERIALIZED (SELECT label, list_transform(r, x ->
-          x / sqrt(list_sum(list_transform(r, y -> y * y)))) AS u
-        FROM rl),
-      mc AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM nr),
-      kv AS (SELECT a.label AS li, b.label AS lj,
-          list_sum(list_transform(list_zip(a.u, b.u), p -> p[1] * p[2]))
-            / mc.m AS kvv
-        FROM nr a, nr b, mc),
-      kr AS (SELECT li, list(kvv ORDER BY lj) AS krow FROM kv GROUP BY li),
-      mat0 AS MATERIALIZED (SELECT list(krow ORDER BY li) AS m FROM kr)
-      $eig,
-      lams AS MATERIALIZED ($lamUnion),
-      ll AS (SELECT list(GREATEST(lam, CAST(0 AS DOUBLE)) ORDER BY c) AS ls
-        FROM lams),
-      hs AS (SELECT CAST(list_sum(list_transform(ls, l ->
-          CASE WHEN l > 0 THEN CAST(ROUND(-(l / list_sum(ls))
-              * ln(l / list_sum(ls)) * 1e6, 0) AS BIGINT)
-            ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS h6
-        FROM ll)
-      SELECT mc.m AS n_labels,
-        ROUND(CAST(h6 AS DOUBLE) / 1e6 * 1e4) / 1e4 AS entropy,
-        ROUND(exp(CAST(h6 AS DOUBLE) / 1e6) * 1e4) / 1e4 AS vendi,
-        ROUND(exp(CAST(h6 AS DOUBLE) / 1e6) / mc.m * 1e4) / 1e4
-          AS vendi_ratio
-      FROM hs, mc"""
-    },
-    "x142_label_noise" -> s"""$clfTrainedSql,
-      zs AS (SELECT doc_id, y,
-          CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
-            AS BIGINT) AS zq
-        FROM tf, w20 GROUP BY doc_id, y),
-      ps AS (SELECT doc_id, y,
-          CAST(ROUND((1 / (1 + exp(-(CAST(zq AS DOUBLE) / 1e9)))) * 1e6, 0)
-            AS BIGINT) AS pq
-        FROM zs),
-      sc AS (SELECT p.doc_id, p.y, p.pq, d.source
-        FROM ps p JOIN documents d USING (doc_id)),
-      th AS (SELECT
-          CAST((2 * SUM(CASE WHEN y = 1 THEN pq ELSE 0 END)
-              + SUM(CASE WHEN y = 1 THEN 1 ELSE 0 END))
-            // (2 * SUM(CASE WHEN y = 1 THEN 1 ELSE 0 END)) AS BIGINT)
-            AS t1,
-          CAST((2 * SUM(CASE WHEN y = 0 THEN 1000000 - pq ELSE 0 END)
-              + SUM(CASE WHEN y = 0 THEN 1 ELSE 0 END))
-            // (2 * SUM(CASE WHEN y = 0 THEN 1 ELSE 0 END)) AS BIGINT)
-            AS t0
-        FROM sc)
-      SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        CAST(SUM(CASE WHEN y = 0 AND pq >= t1 THEN 1 ELSE 0 END) AS BIGINT)
-          AS n_sus_0to1,
-        CAST(SUM(CASE WHEN y = 1 AND 1000000 - pq >= t0 THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_sus_1to0,
-        CAST(((2 * (SUM(CASE WHEN y = 0 AND pq >= t1 THEN 1 ELSE 0 END)
-            + SUM(CASE WHEN y = 1 AND 1000000 - pq >= t0 THEN 1 ELSE 0 END))
-            * 10000 + COUNT(*)) // (2 * COUNT(*))) AS DOUBLE) / 1e4
-          AS noise_rate,
-        CAST(t1 AS DOUBLE) / 1e6 AS t1,
-        CAST(t0 AS DOUBLE) / 1e6 AS t0
-      FROM sc, th GROUP BY source, t1, t0 ORDER BY source""",
-    "x141_unimax_alloc" -> """
-      WITH caps AS (SELECT source,
-          CAST(SUM(len(regexp_split_to_array(trim(text), '\s+')))
-            AS BIGINT) AS n_tok
-        FROM documents GROUP BY source),
-      c2 AS (SELECT source, n_tok, n_tok * 2 AS cap FROM caps),
-      tot AS (SELECT CAST(SUM(n_tok) // 2 AS BIGINT) AS b,
-          CAST(COUNT(*) AS BIGINT) AS m FROM c2),
-      rk AS (SELECT *, ROW_NUMBER() OVER (ORDER BY cap, source) AS rn,
-          SUM(cap) OVER (ORDER BY cap, source) AS cum
-        FROM c2, tot),
-      st AS (SELECT *, (cum + cap * (m - rn) <= b) AS sat FROM rk),
-      sg AS (SELECT COALESCE(SUM(CASE WHEN sat THEN 1 ELSE 0 END), 0)
-            AS jstar,
-          COALESCE(SUM(CASE WHEN sat THEN cap END), 0) AS spent
-        FROM st),
-      al AS (SELECT st.*, sg.jstar,
-          (b - spent) // (m - jstar) AS level,
-          (b - spent) - ((b - spent) // (m - jstar)) * (m - jstar) AS rem
-        FROM st, sg),
-      fin AS (SELECT source, n_tok, cap,
-          CASE WHEN sat THEN cap ELSE level
-            + (CASE WHEN rn - jstar <= rem THEN 1 ELSE 0 END) END AS alloc,
-          sat
-        FROM al)
-      SELECT source, n_tok, cap, CAST(alloc AS BIGINT) AS alloc,
-        CAST(((2 * alloc * 10000 + n_tok) // (2 * n_tok)) AS DOUBLE) / 1e4
-          AS epochs,
-        sat AS saturated
-      FROM fin ORDER BY source""",
-    "x140_blocklist_filter" -> """
-      WITH t AS (SELECT source,
-          list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-            w -> w <> '') AS toks
-        FROM documents),
-      h AS (SELECT source, CAST(len(toks) AS BIGINT) AS n_tok,
-          CAST(len(list_filter(toks, w -> w IN ('slow', 'dup', 'hash')))
-            AS BIGINT) AS hits
-        FROM t)
-      SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        CAST(SUM(CASE WHEN hits > 0 THEN 1 ELSE 0 END) AS BIGINT)
-          AS n_flagged,
-        CAST(((2 * SUM(CASE WHEN hits > 0 THEN 1 ELSE 0 END) * 10000
-            + COUNT(*)) // (2 * COUNT(*))) AS DOUBLE) / 1e4 AS flag_rate,
-        CAST(SUM(hits) AS BIGINT) AS n_hits,
-        CAST(SUM(n_tok) AS BIGINT) AS n_tok,
-        CAST(SUM(CASE WHEN hits > 0 THEN n_tok ELSE 0 END) AS BIGINT)
-          AS tok_removed,
-        CAST(((2 * SUM(CASE WHEN hits > 0 THEN n_tok ELSE 0 END) * 10000
-            + SUM(n_tok)) // (2 * SUM(n_tok))) AS DOUBLE) / 1e4
-          AS tok_removed_share
-      FROM h GROUP BY source ORDER BY source""",
-    "x139_uncertainty_sample" -> s"""$clfTrainedSql,
-      zs AS (SELECT doc_id, y,
-          CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
-            AS BIGINT) AS zq
-        FROM tf, w20 GROUP BY doc_id, y),
-      ps AS (SELECT doc_id,
-          ABS(CAST(ROUND((1 / (1 + exp(-(CAST(zq AS DOUBLE) / 1e9)))) * 1e6,
-            0) AS BIGINT) - 500000) AS mg
-        FROM zs),
-      sc AS (SELECT p.doc_id, p.mg, d.source
-        FROM ps p JOIN documents d USING (doc_id)),
-      h AS (SELECT mg, CAST(COUNT(*) AS BIGINT) AS cnt FROM sc GROUP BY mg),
-      tt AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n FROM h),
-      c AS (SELECT mg, CAST(SUM(cnt) OVER (ORDER BY mg) AS BIGINT) AS cum
-        FROM h),
-      cut AS (SELECT MIN(mg) AS cut05 FROM c, tt WHERE cum * 20 >= n)
-      SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        CAST(SUM(CASE WHEN mg < cut05 THEN 1 ELSE 0 END) AS BIGINT)
-          AS n_sel,
-        CAST(((2 * SUM(CASE WHEN mg < cut05 THEN 1 ELSE 0 END) * 10000
-            + COUNT(*)) // (2 * COUNT(*))) AS DOUBLE) / 1e4 AS sel_rate,
-        CASE WHEN SUM(CASE WHEN mg < cut05 THEN 1 ELSE 0 END) > 0 THEN
-          CAST(((2 * SUM(CASE WHEN mg < cut05 THEN mg ELSE 0 END)
-              + SUM(CASE WHEN mg < cut05 THEN 1 ELSE 0 END))
-            // (2 * SUM(CASE WHEN mg < cut05 THEN 1 ELSE 0 END)))
-            AS DOUBLE) / 1e6 END AS mean_margin_sel,
-        CAST(cut05 AS DOUBLE) / 1e6 AS cut_margin
-      FROM sc, cut GROUP BY source, cut05 ORDER BY source""",
-    "x138_clf_roc" -> s"""$clfTrainedSql,
-      zs AS (SELECT doc_id, y,
-          CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
-            AS BIGINT) AS zq
-        FROM tf, w20 GROUP BY doc_id, y),
-      ps AS (SELECT doc_id, y,
-          CAST(ROUND((1 / (1 + exp(-(CAST(zq AS DOUBLE) / 1e9)))) * 1e6, 0)
-            AS BIGINT) AS pq
-        FROM zs),
-      hist AS MATERIALIZED (SELECT pq, CAST(SUM(y) AS BIGINT) AS pos,
-          CAST(SUM(1 - y) AS BIGINT) AS neg
-        FROM ps GROUP BY pq),
-      cn AS (SELECT pq, pos, neg,
-          COALESCE(SUM(neg) OVER (ORDER BY pq
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cumneg
-        FROM hist),
-      au AS (SELECT CAST(((2 * (CAST(SUM(CAST(pos AS HUGEINT)
-              * (2 * cumneg + neg)) AS HUGEINT) * 1000000)
-            + 2 * CAST(SUM(pos) AS HUGEINT) * SUM(neg))
-          // (2 * (2 * CAST(SUM(pos) AS HUGEINT) * SUM(neg))))
-          AS DOUBLE) / 1e6 AS auc
-        FROM cn),
-      grid AS (SELECT r.i * 100000 AS t FROM range(0, 11) r(i)),
-      th AS (SELECT g.t,
-          CAST(SUM(CASE WHEN pq >= g.t THEN pos ELSE 0 END) AS BIGINT) AS tp,
-          CAST(SUM(CASE WHEN pq >= g.t THEN neg ELSE 0 END) AS BIGINT) AS fp,
-          CAST(SUM(pos) AS BIGINT) AS p, CAST(SUM(neg) AS BIGINT) AS n
-        FROM hist, grid g GROUP BY g.t)
-      SELECT t, tp + fp AS n_pred_pos,
-        CAST(((2 * tp * 10000 + p) // (2 * p)) AS DOUBLE) / 1e4 AS tpr,
-        CAST(((2 * fp * 10000 + n) // (2 * n)) AS DOUBLE) / 1e4 AS fpr,
-        CASE WHEN tp + fp > 0 THEN
-          CAST(((2 * tp * 10000 + tp + fp) // (2 * (tp + fp)))
-            AS DOUBLE) / 1e4 END AS "precision",
-        auc
-      FROM th, au ORDER BY t""",
-    "x136_temp_scaling" -> s"""$clfTrainedSql,
-      zs AS (SELECT doc_id, y,
-          CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
-            AS BIGINT) AS zq
-        FROM tf, w20 GROUP BY doc_id, y),
-      vz AS (SELECT * FROM zs
-        WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
-          % 100 BETWEEN 90 AND 94),
-      grid AS (SELECT unnest(range(25, 401, 5)) AS tq),
-      pt AS (SELECT vz.y, grid.tq,
-          LEAST(GREATEST(CAST(ROUND((1 / (1 + exp(-((CAST(zq AS DOUBLE)
-              / 1e9) / (CAST(tq AS DOUBLE) / 100))))) * 1e6, 0) AS BIGINT),
-            1), 999999) AS pc
-        FROM vz, grid),
-      nl AS (SELECT tq, CAST(SUM(CAST(ROUND(-ln(CAST(
-            CASE WHEN y = 1 THEN pc ELSE 1000000 - pc END AS DOUBLE) / 1e6)
-            * 1e6, 0) AS BIGINT)) AS BIGINT) AS snll
-        FROM pt GROUP BY tq),
-      ts AS (SELECT tq FROM nl ORDER BY snll, tq LIMIT 1),
-      cp AS (SELECT zs.y, ts.tq,
-          CAST(ROUND((1 / (1 + exp(-((CAST(zq AS DOUBLE) / 1e9)
-            / (CAST(ts.tq AS DOUBLE) / 100))))) * 1e6, 0) AS BIGINT) AS pq
-        FROM zs, ts),
-      bn AS (SELECT LEAST(pq // 100000, 9) AS bin, tq,
-          CAST(COUNT(*) AS BIGINT) AS n_docs,
-          CAST(SUM(pq) AS BIGINT) AS spq, CAST(SUM(y) AS BIGINT) AS sy
-        FROM cp GROUP BY 1, 2)
-      SELECT bin, n_docs,
-        CAST(((2 * spq + n_docs) // (2 * n_docs)) AS DOUBLE) / 1e6
-          AS mean_pred,
-        CAST(((2 * sy * 1000000 + n_docs) // (2 * n_docs)) AS DOUBLE) / 1e6
-          AS pos_rate,
-        CAST(ABS(((2 * spq + n_docs) // (2 * n_docs))
-          - ((2 * sy * 1000000 + n_docs) // (2 * n_docs))) AS DOUBLE) / 1e6
-          AS gap,
-        CAST(tq AS DOUBLE) / 1e2 AS t
-      FROM bn ORDER BY bin""",
-    "x118_clf_calibration" -> s"""$clfTrainedSql,
-      zs AS (SELECT doc_id, y,
-          CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
-            AS BIGINT) AS zq
-        FROM tf, w20 GROUP BY doc_id, y),
-      ps AS (SELECT doc_id, y,
-          CAST(ROUND((1 / (1 + exp(-(CAST(zq AS DOUBLE) / 1e9)))) * 1e6, 0)
-            AS BIGINT) AS pq
-        FROM zs),
-      bs AS (SELECT LEAST(pq // 100000, 9) AS bin,
-          CAST(COUNT(*) AS BIGINT) AS n_docs,
-          CAST(SUM(pq) AS BIGINT) AS spq, CAST(SUM(y) AS BIGINT) AS sy
-        FROM ps GROUP BY 1)
-      SELECT bin, n_docs,
-        CAST(((2 * spq + n_docs) // (2 * n_docs)) AS DOUBLE) / 1e6
-          AS mean_pred,
-        CAST(((2 * sy * 1000000 + n_docs) // (2 * n_docs)) AS DOUBLE) / 1e6
-          AS pos_rate,
-        CAST(ABS(((2 * spq + n_docs) // (2 * n_docs))
-            - ((2 * sy * 1000000 + n_docs) // (2 * n_docs))) AS DOUBLE) / 1e6
-          AS gap
-      FROM bs ORDER BY bin""",
-    "x111_alignment_score" -> s"""
-      WITH tf AS (
-        SELECT doc_id, source, (${md5Hash32Sql("w")}) % 64 AS bucket,
-          CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM (SELECT doc_id, source,
-            unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS w
-          FROM documents)
-        WHERE w <> '' GROUP BY 1, 2, 3),
-      nt2 AS (SELECT doc_id, CAST(SUM(cnt * cnt) AS BIGINT) AS nt2
-        FROM tf GROUP BY doc_id),
-      ee AS (SELECT vec_id, unnest(range(0, len(embedding))) AS pos,
-          unnest(embedding) AS e
-        FROM embeddings),
-      dot AS (SELECT tf.doc_id, tf.source,
-          CAST(SUM(CAST(ROUND(CAST(cnt AS DOUBLE) * CAST(e AS DOUBLE) * 1e6, 0)
-            AS BIGINT)) AS BIGINT) AS dotq
-        FROM tf JOIN ee ON ee.vec_id = tf.doc_id AND ee.pos = tf.bucket
-        GROUP BY 1, 2),
-      ne2 AS (SELECT vec_id AS doc_id,
-          list_sum(list_transform(embedding,
-            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS ne2
-        FROM embeddings),
-      scored AS (SELECT dot.doc_id, dot.source,
-          ROUND((CAST(dotq AS DOUBLE) / 1e6)
-            / (sqrt(CAST(nt2.nt2 AS DOUBLE)) * sqrt(ne2.ne2)), 6) AS cos
-        FROM dot JOIN nt2 USING (doc_id) JOIN ne2 USING (doc_id))
-      SELECT source, CAST(t100 AS DOUBLE) / 100 AS threshold,
-        CAST(COUNT(*) AS BIGINT) AS n_pairs,
-        CAST(SUM(CASE WHEN cos > CAST(t100 AS DOUBLE) / 100
-          THEN 1 ELSE 0 END) AS BIGINT) AS n_pass,
-        CAST(((2 * SUM(CASE WHEN cos > CAST(t100 AS DOUBLE) / 100
-            THEN 1 ELSE 0 END) * 10000 + COUNT(*))
-          // (2 * COUNT(*))) AS DOUBLE) / 1e4 AS pass_rate
-      FROM scored, unnest([-5, -2, 0, 2, 5]) AS t(t100)
-      GROUP BY source, t100 ORDER BY source, threshold""",
-    "x109_ivf_addbatch" -> {
-      // base-trained Lloyd (the ivfAssignedCtes recipe with the
-      // pre-batch corpus as source and ORDER BY/LIMIT seeds — base
-      // ids are not dense from 0), then frozen-quantizer assignment
-      // of the batch and the per-cell growth/balance table.
-      def assignSql(src: String, cents: String, out: String) = s"""
-      $out AS (SELECT vec_id, embedding, cid AS cell FROM (
-          SELECT e.vec_id, e.embedding, c.cid,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id
-              ORDER BY ROUND(${cosSql("e.embedding", "c.ce")}, 6) DESC, c.cid)
-              AS rk
-          FROM $src e, $cents c) WHERE rk = 1)"""
-      def centSql(assign: String, out: String) = s"""
-      $out AS (SELECT cell AS cid,
-          list(CAST(CAST(sv AS DOUBLE) / (CAST(n AS DOUBLE) * 16777216)
-            AS FLOAT) ORDER BY pos) AS ce
-        FROM (
-          SELECT cell, i AS pos,
-            CAST(SUM(CAST(FLOOR(CAST(embedding[i] AS DOUBLE) * 16777216)
-              AS BIGINT)) AS BIGINT) AS sv,
-            COUNT(*) AS n
-          FROM $assign, UNNEST(range(1, len(embedding) + 1)) AS t(i)
-          GROUP BY cell, i)
-        GROUP BY cell)"""
-      s"""WITH base AS (SELECT * FROM embeddings WHERE vec_id % 10 <> 7),
-      batch AS (SELECT * FROM embeddings WHERE vec_id % 10 = 7),
-      cent0 AS (SELECT vec_id AS cid, embedding AS ce FROM base
-        ORDER BY vec_id LIMIT 16),
-      ${assignSql("base", "cent0", "assign0")},
-      ${centSql("assign0", "cent1")},
-      ${assignSql("base", "cent1", "assign1")},
-      ${centSql("assign1", "cent2")},
-      ${assignSql("base", "cent2", "basecells")},
-      ${assignSql("batch", "cent2", "addcells")},
-      bc AS (SELECT cell, COUNT(*) AS n_base FROM basecells GROUP BY cell),
-      ac AS (SELECT cell, COUNT(*) AS n_add FROM addcells GROUP BY cell),
-      st AS (SELECT c.cid AS cell,
-          COALESCE(bc.n_base, 0) AS n_base,
-          COALESCE(ac.n_add, 0) AS n_add,
-          COALESCE(bc.n_base, 0) + COALESCE(ac.n_add, 0) AS n_total
-        FROM cent2 c
-        LEFT JOIN bc ON bc.cell = c.cid
-        LEFT JOIN ac ON ac.cell = c.cid),
-      tt AS (SELECT SUM(n_total) AS tot FROM st)
-      SELECT cell, CAST(n_base AS BIGINT) AS n_base,
-        CAST(n_add AS BIGINT) AS n_add,
-        CAST(n_total AS BIGINT) AS n_total,
-        CAST(((2 * n_add * 10000 + GREATEST(n_total, 1))
-          // (2 * GREATEST(n_total, 1))) AS DOUBLE) / 1e4 AS add_share,
-        CAST(((2 * n_total * 10000 + tot) // (2 * tot)) AS DOUBLE) / 1e4
-          AS total_share,
-        n_total * 16 > tot * 2 AS over_2x
-      FROM st, tt ORDER BY cell"""
-    },
-    // x110: the store chain trains on the BASE slice only (vec_id
-    // % 10 <> 7 — the seed set is vec_id < 16 of that relation, 15
-    // seeds); the batch then flows through a SEPARATE frozen-codebook
-    // encode chain (assign against c2f/c2 with no recenter step).
-    "x110_ivfpq_addbatch" -> s"""
-      WITH f AS (SELECT vec_id, 0 AS m, embedding AS sub FROM embeddings
-        WHERE vec_id % 10 <> 7),
-      c0f AS (SELECT m, CAST(vec_id AS INT) AS cid, sub AS ce
-        FROM f WHERE vec_id < 16),
-      ${pqAssignSql("f", "c0f", "a0f")},
-      ${pqCentSql("a0f", "c1f")},
-      ${pqAssignSql("f", "c1f", "a1f")},
-      ${pqCentSql("a1f", "c2f")},
-      ${pqAssignSql("f", "c2f", "af")},
-      res AS (SELECT a.vec_id, a.cell,
-          list_transform(list_zip(a.sub, c.ce),
-            p -> CAST(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) AS FLOAT))
-            AS r
-        FROM af a JOIN c2f c ON c.m = a.m AND c.cid = a.cell),
-      rsub AS (SELECT vec_id, m, list_slice(r, m * 8 + 1, m * 8 + 8) AS sub
-        FROM res, UNNEST(range(0, 8)) AS t(m)),
-      c0 AS (SELECT m, CAST(vec_id AS INT) AS cid, sub AS ce
-        FROM rsub WHERE vec_id < 16),
-      ${pqAssignSql("rsub", "c0", "a0")},
-      ${pqCentSql("a0", "c1")},
-      ${pqAssignSql("rsub", "c1", "a1")},
-      ${pqCentSql("a1", "c2")},
-      ${pqAssignSql("rsub", "c2", "codes")},
-      fa AS (SELECT vec_id, 0 AS m, embedding AS sub FROM embeddings
-        WHERE vec_id % 10 = 7),
-      ${pqAssignSql("fa", "c2f", "aa")},
-      resa AS (SELECT a.vec_id, a.cell,
-          list_transform(list_zip(a.sub, c.ce),
-            p -> CAST(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) AS FLOAT))
-            AS r
-        FROM aa a JOIN c2f c ON c.m = a.m AND c.cid = a.cell),
-      rsuba AS (SELECT vec_id, m, list_slice(r, m * 8 + 1, m * 8 + 8)
-          AS sub
-        FROM resa, UNNEST(range(0, 8)) AS t(m)),
-      ${pqAssignSql("rsuba", "c2", "codesa")},
-      tb AS (SELECT COUNT(*) AS tot_base FROM embeddings
-        WHERE vec_id % 10 <> 7),
-      ta AS (SELECT COUNT(*) AS tot_add FROM embeddings
-        WHERE vec_id % 10 = 7),
-      bc AS (SELECT m, cell AS code, COUNT(*) AS n_base FROM codes
-        GROUP BY 1, 2),
-      ac AS (SELECT m, cell AS code, COUNT(*) AS n_add FROM codesa
-        GROUP BY 1, 2)
-      SELECT CAST(c.m AS BIGINT) AS m, CAST(c.cid AS BIGINT) AS code,
-        CAST(COALESCE(bc.n_base, 0) AS BIGINT) AS n_base,
-        CAST(COALESCE(ac.n_add, 0) AS BIGINT) AS n_add,
-        CAST(((2 * COALESCE(bc.n_base, 0) * 10000 + tb.tot_base)
-          // (2 * tb.tot_base)) AS DOUBLE) / 1e4 AS base_share,
-        CAST(((2 * COALESCE(ac.n_add, 0) * 10000 + ta.tot_add)
-          // (2 * ta.tot_add)) AS DOUBLE) / 1e4 AS add_share
-      FROM c2 c
-      LEFT JOIN bc ON bc.m = c.m AND bc.code = c.cid
-      LEFT JOIN ac ON ac.m = c.m AND ac.code = c.cid
-      CROSS JOIN tb CROSS JOIN ta
-      ORDER BY m, code""",
-    "x99b_opq_recall" -> s"""$opqRotationCtes,
-      sub AS MATERIALIZED (SELECT vec_id, m,
-          list_slice(embedding, m * 8 + 1, m * 8 + 8) AS sub
-        FROM re, UNNEST(range(0, 8)) AS t(m)),
-      c0 AS (SELECT m, CAST(vec_id AS INT) AS cid, sub AS ce
-        FROM sub WHERE vec_id < 16),
-      ${opqAssignSql("sub", "c0", "a0")},
-      ${opqCentSql("a0", "c1")},
-      ${opqAssignSql("sub", "c1", "a1")},
-      ${opqCentSql("a1", "c2")},
-      ${opqAssignSql("sub", "c2", "codes")},
-      qs AS (SELECT vec_id AS qid, m, sub AS qsub FROM sub WHERE vec_id < 5),
-      nce AS (SELECT k.vec_id AS nid, k.m, c.ce
-        FROM codes k JOIN c2 c ON c.m = k.m AND c.cid = k.cell),
-      adc AS (
-        SELECT q.qid, n.nid,
-          CAST(SUM(CAST(ROUND(${pqL2Sql("q.qsub", "n.ce")} * 1e6, 0) AS BIGINT))
-            AS BIGINT) AS adc_q
-        FROM qs q JOIN nce n ON n.m = q.m
-        WHERE n.nid <> q.qid GROUP BY q.qid, n.nid),
-      ex AS (
-        SELECT q.vec_id AS qid, e.vec_id AS nid,
-          CAST(ROUND(${pqL2Sql("q.embedding", "e.embedding")} * 1e6, 0) AS BIGINT)
-            AS ex_q
-        FROM re q, re e
-        WHERE q.vec_id < 5 AND e.vec_id <> q.vec_id),
-      r AS (SELECT ex.qid, ex.nid,
-          ROW_NUMBER() OVER (PARTITION BY ex.qid
-            ORDER BY ex.ex_q, ex.nid) AS rf,
-          ROW_NUMBER() OVER (PARTITION BY ex.qid
-            ORDER BY adc.adc_q, ex.nid) AS rq
-        FROM ex JOIN adc USING (qid, nid))
-      SELECT qid,
-        CAST(SUM(CASE WHEN rf <= 10 AND rq <= 10 THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_match,
-        CAST(SUM(CASE WHEN rf <= 10 AND rq <= 10 THEN 1 ELSE 0 END)
-          AS DOUBLE) / 10 AS recall_at_10
-      FROM r GROUP BY qid ORDER BY qid""",
-    "x114_opq_serve" -> s"""$opqRotationCtes,
-      f AS (SELECT vec_id, 0 AS m, embedding AS sub FROM re),
-      c0f AS (SELECT m, CAST(vec_id AS INT) AS cid, sub AS ce
-        FROM f WHERE vec_id < 16),
-      ${opqAssignSql("f", "c0f", "a0f")},
-      ${opqCentSql("a0f", "c1f")},
-      ${opqAssignSql("f", "c1f", "a1f")},
-      ${opqCentSql("a1f", "c2f")},
-      ${opqAssignSql("f", "c2f", "aff")},
-      res AS MATERIALIZED (SELECT a.vec_id, a.cell,
-          list_transform(list_zip(a.sub, c.ce),
-            p -> CAST(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) AS FLOAT))
-            AS r
-        FROM aff a JOIN c2f c ON c.m = a.m AND c.cid = a.cell),
-      rsub AS MATERIALIZED (SELECT vec_id, m,
-          list_slice(r, m * 8 + 1, m * 8 + 8) AS sub
-        FROM res, UNNEST(range(0, 8)) AS t(m)),
-      c0 AS (SELECT m, CAST(vec_id AS INT) AS cid, sub AS ce
-        FROM rsub WHERE vec_id < 16),
-      ${opqAssignSql("rsub", "c0", "a0")},
-      ${opqCentSql("a0", "c1")},
-      ${opqAssignSql("rsub", "c1", "a1")},
-      ${opqCentSql("a1", "c2")},
-      ${opqAssignSql("rsub", "c2", "codes")},
-      probes AS (SELECT qid, cell, qce, qe FROM (
-          SELECT q.vec_id AS qid, c.cid AS cell, c.ce AS qce,
-            q.embedding AS qe,
-            ROW_NUMBER() OVER (PARTITION BY q.vec_id
-              ORDER BY CAST(ROUND(${pqL2Sql("q.embedding", "c.ce")} * 1e6, 0)
-                AS BIGINT), c.cid) AS rk
-          FROM re q, c2f c WHERE q.vec_id < 5) WHERE rk <= 4),
-      qr AS (SELECT qid, cell,
-          list_transform(list_zip(qe, qce),
-            p -> CAST(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) AS FLOAT))
-            AS qr
-        FROM probes),
-      qrs AS (SELECT qid, cell, m, list_slice(qr, m * 8 + 1, m * 8 + 8)
-            AS qsub
-        FROM qr, UNNEST(range(0, 8)) AS t(m)),
-      nce AS (SELECT k.vec_id AS nid, k.m, c.ce, a.cell
-        FROM codes k
-        JOIN c2 c ON c.m = k.m AND c.cid = k.cell
-        JOIN aff a ON a.vec_id = k.vec_id),
-      adc AS (SELECT s.qid, n.nid,
-          CAST(SUM(CAST(ROUND(${pqL2Sql("s.qsub", "n.ce")} * 1e6, 0)
-            AS BIGINT)) AS BIGINT) AS dist_q
-        FROM qrs s JOIN nce n ON n.cell = s.cell AND n.m = s.m
-        WHERE n.nid <> s.qid GROUP BY s.qid, n.nid),
-      r AS (SELECT qid, nid, dist_q,
-          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dist_q, nid) AS rk
-        FROM adc)
-      SELECT qid, nid, dist_q, CAST(rk AS INT) AS rk
-      FROM r WHERE rk <= 10 ORDER BY qid, rk""",
-    "x116_cdc_chunks" -> {
-      val winSql = "toks[i-3] || ' ' || toks[i-2] || ' ' || toks[i-1] || ' ' || toks[i]"
-      s"""
-      WITH tk AS (SELECT doc_id,
-          regexp_split_to_array(trim(text), '\\s+') AS toks
-        FROM documents),
-      t AS (SELECT doc_id, toks, len(toks) AS n FROM tk WHERE len(toks) > 0),
-      b AS (SELECT doc_id, toks, n,
-          list_filter(range(4, GREATEST(n, 4) + 1), i ->
-            i <= n AND (${md5Hash32Sql(winSql)}) % 16 = 0) AS bpos
-        FROM t),
-      e AS (SELECT doc_id, toks, n,
-          CASE WHEN len(bpos) > 0 AND bpos[-1] = n THEN bpos
-            ELSE list_append(bpos, n) END AS ends
-        FROM b),
-      st AS (SELECT doc_id, toks, ends,
-          list_transform(ends, (x, j) ->
-            CASE WHEN j = 1 THEN 1 ELSE ends[j - 1] + 1 END) AS starts
-        FROM e),
-      chunks AS MATERIALIZED (SELECT doc_id, k - 1 AS ci,
-          md5(array_to_string(list_slice(toks, starts[k],
-            ends[k]), ' ')) AS fp,
-          CAST(ends[k] - starts[k] + 1 AS BIGINT) AS tok_len
-        FROM st, unnest(range(1, len(ends) + 1)) AS u(k)),
-      occ AS (SELECT fp, COUNT(*) AS occ FROM chunks GROUP BY fp)
-      SELECT c.doc_id, CAST(COUNT(*) AS BIGINT) AS n_chunks,
-        CAST(SUM(CASE WHEN o.occ >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-          AS n_dup,
-        CAST(SUM(c.tok_len) AS BIGINT) AS n_tok,
-        CAST(SUM(CASE WHEN o.occ >= 2 THEN c.tok_len ELSE 0 END) AS BIGINT)
-          AS dup_tok,
-        CAST(((2 * SUM(CASE WHEN o.occ >= 2 THEN c.tok_len ELSE 0 END)
-            * 10000 + SUM(c.tok_len))
-          // (2 * SUM(c.tok_len))) AS DOUBLE) / 1e4 AS dedup_frac
-      FROM chunks c JOIN occ o USING (fp)
-      GROUP BY c.doc_id ORDER BY c.doc_id"""
-    },
-    "x115_bpe_drift" -> {
-      val segCtes = new StringBuilder
-      segCtes ++= """sw AS MATERIALIZED (
-          SELECT source, w, CAST(COUNT(*) AS BIGINT) AS f
-          FROM (SELECT source,
-                unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS w
-                FROM documents WHERE doc_id % 10 = 7)
-          WHERE w <> '' GROUP BY source, w),
-        g0 AS MATERIALIZED (SELECT w, CAST(0 AS BIGINT) AS f,
-          list_transform(range(1, length(w)+1), i ->
-            substring(w, CAST(i AS INT), 1)) AS syms
-          FROM (SELECT DISTINCT w FROM sw))"""
-      for (k <- 1 to bpeK)
-        segCtes ++= s""",
-        g$k AS MATERIALIZED (${bpeApplySql(s"g${k - 1}, m$k m")})"""
-      s"""WITH ${bpeTrainCtesOn("doc_id % 10 <> 7", 16)}, $segCtes,
-        nsub AS (SELECT w, CAST(len(syms) AS BIGINT) AS n_sub FROM g$bpeK),
-        iv AS (SELECT w, 1 AS in_vocab FROM wf)
-        SELECT sw.source, CAST(SUM(sw.f) AS BIGINT) AS n_words,
-          CAST(SUM(sw.f * n.n_sub) AS BIGINT) AS n_subtok,
-          CAST(SUM(CASE WHEN n.n_sub = 1 THEN sw.f ELSE 0 END) AS BIGINT)
-            AS n_single,
-          CAST(SUM(CASE WHEN iv.in_vocab IS NULL THEN sw.f ELSE 0 END)
-            AS BIGINT) AS n_oov,
-          CAST(((2 * SUM(sw.f * n.n_sub) * 10000 + SUM(sw.f))
-            // (2 * SUM(sw.f))) AS DOUBLE) / 1e4 AS fertility,
-          CAST(((2 * SUM(CASE WHEN iv.in_vocab IS NULL THEN sw.f ELSE 0 END)
-              * 10000 + SUM(sw.f))
-            // (2 * SUM(sw.f))) AS DOUBLE) / 1e4 AS oov_rate
-        FROM sw JOIN nsub n USING (w) LEFT JOIN iv USING (w)
-        GROUP BY sw.source ORDER BY sw.source"""
-    },
-    "x106_bpe_train" -> {
-      val union = (1 to bpeK).map(k =>
-        s"""SELECT CAST($k AS BIGINT) AS step, a AS lhs, b AS rhs,
-            a || b AS merged, cnt AS pair_freq FROM m$k""")
-        .mkString(" UNION ALL ")
-      s"""WITH $bpeTrainCtes
-        SELECT * FROM ($union) WHERE lhs <> chr(1) ORDER BY step"""
-    },
-    "x145_wordpiece_train" -> {
-      val union = (1 to bpeK).map(k =>
-        s"""SELECT CAST($k AS BIGINT) AS step, a AS lhs, b AS rhs,
-            a || b AS merged, cnt AS pair_freq, ca AS lhs_freq,
-            cb AS rhs_freq, CAST(q AS DOUBLE) / 1e12 AS score
-            FROM ym$k""")
-        .mkString(" UNION ALL ")
-      s"""WITH $wpTrainCtes
-        SELECT * FROM ($union) WHERE lhs <> chr(1) ORDER BY step"""
-    },
-    "x123_bpe_scaling" -> {
-      val segCtes = new StringBuilder
-      segCtes ++= """sw AS MATERIALIZED (
-          SELECT source, w, CAST(COUNT(*) AS BIGINT) AS f
-          FROM (SELECT source,
-                unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS w
-                FROM documents)
-          WHERE w <> '' GROUP BY source, w),
-        g0 AS MATERIALIZED (SELECT w, CAST(0 AS BIGINT) AS f,
-          list_transform(range(1, length(w)+1), i ->
-            substring(w, CAST(i AS INT), 1)) AS syms
-          FROM (SELECT DISTINCT w FROM sw))"""
-      for (k <- 1 to bpeK)
-        segCtes ++= s""",
-        g$k AS MATERIALIZED (${bpeApplySql(s"g${k - 1}, m$k m")})"""
-      val stageSql = Seq(10, 25, 50).map { k =>
-        s"""SELECT sw.source, CAST($k AS BIGINT) AS k,
-          CAST(SUM(sw.f) AS BIGINT) AS n_words,
-          CAST(SUM(sw.f * n.n_sub) AS BIGINT) AS n_subtok
-        FROM sw JOIN (SELECT w, CAST(len(syms) AS BIGINT) AS n_sub
-          FROM g$k) n USING (w)
-        GROUP BY sw.source"""
-      }.mkString("\n        UNION ALL ")
-      s"""WITH $bpeTrainCtes, $segCtes,
-        stages AS ($stageSql)
-        SELECT source, k, n_words, n_subtok,
-          CAST(((2 * n_subtok * 10000 + n_words) // (2 * n_words))
-            AS DOUBLE) / 1e4 AS fertility
-        FROM stages ORDER BY source, k"""
-    },
-    "x122_clf_filter" -> s"""$clfTrainedSql,
-      zs AS (SELECT doc_id, y,
-          CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
-            AS BIGINT) AS zq
-        FROM tf, w20 GROUP BY doc_id, y),
-      ps AS (SELECT doc_id, y,
-          CAST(ROUND((1 / (1 + exp(-(CAST(zq AS DOUBLE) / 1e9)))) * 1e6, 0)
-            AS BIGINT) AS pq
-        FROM zs),
-      j AS (SELECT d.source, p.pq, p.y
-        FROM ps p JOIN documents d USING (doc_id))
-      SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        CAST(SUM(CASE WHEN pq >= 500000 THEN 1 ELSE 0 END) AS BIGINT)
-          AS n_kept,
-        CAST(((2 * SUM(CASE WHEN pq >= 500000 THEN 1 ELSE 0 END) * 10000
-            + COUNT(*)) // (2 * COUNT(*))) AS DOUBLE) / 1e4 AS keep_rate,
-        CAST(SUM(CASE WHEN (pq >= 500000) = (y = 1) THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_agree,
-        CAST(((2 * SUM(CASE WHEN (pq >= 500000) = (y = 1) THEN 1 ELSE 0 END)
-            * 10000 + COUNT(*)) // (2 * COUNT(*))) AS DOUBLE) / 1e4
-          AS agree_rate
-      FROM j GROUP BY source ORDER BY source""",
-    "x151_good_turing" -> """
-      WITH cnt AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c
-        FROM (SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS w
-              FROM documents)
-        GROUP BY w),
-      fof AS MATERIALIZED (
-        SELECT c AS r, CAST(COUNT(*) AS BIGINT) AS n_r
-        FROM cnt GROUP BY c),
-      tot AS (SELECT CAST(SUM(r * n_r) AS BIGINT) AS n FROM fof),
-      wz AS (SELECT r, n_r FROM fof
-        UNION ALL SELECT CAST(0 AS BIGINT), CAST(0 AS BIGINT))
-      SELECT wz.r, wz.n_r,
-        CASE WHEN wz.n_r > 0 AND nx.n_next IS NOT NULL THEN
-          CAST(((2 * (wz.r + 1) * nx.n_next * 10000 + wz.n_r)
-            // (2 * wz.n_r)) AS DOUBLE) / 1e4 END AS r_star,
-        CAST(((2 * (wz.r + 1) * COALESCE(nx.n_next, 0) * 1000000 + tot.n)
-          // (2 * tot.n)) AS DOUBLE) / 1e6 AS gt_mass
-      FROM wz
-      LEFT JOIN (SELECT r - 1 AS r, n_r AS n_next FROM fof) nx
-        USING (r)
-      CROSS JOIN tot
-      ORDER BY r""",
-    "x165_truncation_loss" -> """
-      WITH nt AS (SELECT source,
-          CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT)
-            AS n_tok
-        FROM documents),
-      grid AS (SELECT CAST(unnest([128, 512, 2048]) AS BIGINT)
-          AS seq_len)
-      SELECT source, seq_len, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        CAST(SUM(CASE WHEN n_tok > seq_len THEN 1 ELSE 0 END) AS BIGINT)
-          AS n_truncated,
-        CAST(SUM(n_tok) AS BIGINT) AS n_tok,
-        CAST(SUM(GREATEST(n_tok - seq_len, 0)) AS BIGINT) AS tok_lost,
-        CAST(((2 * SUM(GREATEST(n_tok - seq_len, 0)) * 10000
-            + SUM(n_tok)) // (2 * SUM(n_tok))) AS DOUBLE) / 1e4
-          AS loss_share
-      FROM nt, grid GROUP BY source, seq_len
-      ORDER BY source, seq_len""",
-    // x166: the gram NLL CTEs mirror doremiExcessQ; the 10
-    // multiplicative-weight steps are unrolled with EVERY step CTE
-    // MATERIALIZED (the x146 lesson — un-materialized multi-referenced
-    // step CTEs inline exponentially) on HUGEINT (the step numerators
-    // reach ~10^21).
-    "x166_doremi_weights" -> {
-      val steps = (1 to 10).map { t =>
-        s"""
-      m$t AS MATERIALIZED (SELECT w.source,
-          CAST(a.aq AS HUGEINT) * w.wq AS m
-        FROM a${t - 1} a JOIN wts w USING (source)),
-      sm$t AS (SELECT CAST(SUM(m) AS HUGEINT) AS sm FROM m$t),
-      n$t AS MATERIALIZED (SELECT source, 99 * s * m + sm AS nm,
-          100 * s * sm AS den FROM m$t, sm$t, sc),
-      b$t AS MATERIALIZED (SELECT source,
-          (nm * 1000000) // den AS base, (nm * 1000000) % den AS rem
-        FROM n$t),
-      k$t AS (SELECT 1000000 - SUM(base) AS k FROM b$t),
-      a$t AS MATERIALIZED (SELECT source, base + CASE WHEN ROW_NUMBER()
-          OVER (ORDER BY rem DESC, source) <= k THEN 1 ELSE 0 END AS aq
-        FROM b$t, k$t)"""
-      }.mkString(",")
-      val unions = (1 to 10).map(t => s"SELECT source, aq FROM a$t")
-        .mkString(" UNION ALL ")
-      s"""
-      WITH dd AS (SELECT source, text,
-          ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
-            % 100 AS b
-        FROM documents),
-      tr AS (SELECT regexp_split_to_array(trim(text), '\\s+') AS toks
-        FROM dd WHERE b < 90),
-      ho AS (SELECT source, text FROM dd WHERE b >= 90),
-      uni AS (SELECT w1, CAST(COUNT(*) AS BIGINT) AS c1
-        FROM (SELECT unnest(toks) AS w1 FROM tr) GROUP BY w1),
-      scal AS (SELECT CAST(SUM(c1) AS BIGINT) AS nn,
-          CAST(COUNT(*) + 1 AS BIGINT) AS v FROM uni),
-      cnt2 AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS c2 FROM (
-          SELECT unnest(list_transform(range(1, greatest(len(toks) - 1, 0)
-            + 1), i -> toks[i] || ' ' || toks[i+1])) AS g FROM tr)
-        GROUP BY g),
-      htok AS (SELECT source,
-          unnest(regexp_split_to_array(trim(text), '\\s+')) AS w1
-        FROM ho),
-      eu AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS nu,
-          CAST(SUM(CAST(ROUND(-LN(
-            (CAST(COALESCE(c1, 0) AS DOUBLE) + 1.0)
-            / CAST(nn + v AS DOUBLE)) * 1e4, 0) AS BIGINT)) AS BIGINT)
-            AS su
-        FROM htok LEFT JOIN uni USING (w1) CROSS JOIN scal
-        GROUP BY source),
-      ellu AS (SELECT source, (2 * su + nu) // (2 * nu) AS ell_uni_q
-        FROM eu),
-      hbi AS (SELECT source, g, split_part(g, ' ', 1) AS w1 FROM (
-          SELECT source,
-            unnest(list_transform(range(1, greatest(len(toks) - 1, 0)
-              + 1), i -> toks[i] || ' ' || toks[i+1])) AS g
-          FROM (SELECT source,
-              regexp_split_to_array(trim(text), '\\s+') AS toks
-            FROM ho))),
-      ebb AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS nb,
-          CAST(SUM(CAST(ROUND(-LN(
-            (CAST(COALESCE(c2, 0) AS DOUBLE) + 1.0)
-            / (CAST(COALESCE(c1, 0) AS DOUBLE) + CAST(v AS DOUBLE)))
-            * 1e4, 0) AS BIGINT)) AS BIGINT) AS sb
-        FROM hbi LEFT JOIN cnt2 USING (g) LEFT JOIN uni USING (w1)
-        CROSS JOIN scal GROUP BY source),
-      ellb AS (SELECT source, (2 * sb + nb) // (2 * nb) AS ell_bi_q
-        FROM ebb),
-      exc AS MATERIALIZED (SELECT source, ell_uni_q, ell_bi_q,
-          GREATEST(ell_uni_q - ell_bi_q, 0) AS excess_q
-        FROM ellu JOIN ellb USING (source)),
-      wts AS MATERIALIZED (SELECT source,
-          CAST(ROUND(EXP(0.1 * CAST(excess_q AS DOUBLE) / 1e4) * 1e6, 0)
-            AS HUGEINT) AS wq
-        FROM exc),
-      sc AS (SELECT CAST(COUNT(*) AS HUGEINT) AS s FROM wts),
-      u0 AS (SELECT source, CAST(1000000 AS HUGEINT) // s AS base,
-          CAST(1000000 AS HUGEINT) % s AS rem FROM wts, sc),
-      k0 AS (SELECT 1000000 - SUM(base) AS k FROM u0),
-      a0 AS MATERIALIZED (SELECT source, base + CASE WHEN ROW_NUMBER()
-          OVER (ORDER BY rem DESC, source) <= k THEN 1 ELSE 0 END AS aq
-        FROM u0, k0),$steps,
-      acc AS (SELECT source, CAST(SUM(aq) AS HUGEINT) AS a
-        FROM ($unions) GROUP BY source),
-      fb AS MATERIALIZED (SELECT source, a // 10 AS base, a % 10 AS rem
-        FROM acc),
-      fk AS (SELECT 1000000 - SUM(base) AS k FROM fb),
-      fin AS (SELECT source, base + CASE WHEN ROW_NUMBER()
-          OVER (ORDER BY rem DESC, source) <= k THEN 1 ELSE 0 END AS fq
-        FROM fb, fk)
-      SELECT e.source, CAST(ell_uni_q AS DOUBLE) / 1e4 AS ell_proxy,
-        CAST(ell_bi_q AS DOUBLE) / 1e4 AS ell_ref,
-        CAST(excess_q AS DOUBLE) / 1e4 AS excess,
-        CAST(fq AS DOUBLE) / 1e6 AS weight
-      FROM exc e JOIN fin USING (source) ORDER BY e.source"""
-    },
-    // x167: one query trains BOTH merge tables (shared wf on the train
-    // split) plus the unigram piece scores, replays all three on the
-    // held-out word table, and aggregates per tokenizer.
-    "x167_tokenizer_audit" -> {
-      val trainWhere =
-        "('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % 100 < 90"
-      val hoWhere =
-        "('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % 100 >= 90"
-      val segB = new StringBuilder
-      segB ++= """hb0 AS MATERIALIZED (SELECT w, CAST(0 AS BIGINT) AS f,
-          list_transform(range(1, length(w)+1), i ->
-            substring(w, CAST(i AS INT), 1)) AS syms
-          FROM (SELECT w FROM hw))"""
-      for (k <- 1 to bpeK)
-        segB ++= s""",
-        hb$k AS MATERIALIZED (${bpeApplySql(s"hb${k - 1}, m$k m")})"""
-      val segY = new StringBuilder
-      segY ++= """hy0 AS MATERIALIZED (SELECT w, CAST(0 AS BIGINT) AS f,
-          list_transform(range(1, length(w)+1), i ->
-            substring(w, CAST(i AS INT), 1)) AS syms
-          FROM (SELECT w FROM hw))"""
-      for (k <- 1 to bpeK)
-        segY ++= s""",
-        hy$k AS MATERIALIZED (${bpeApplySql(s"hy${k - 1}, ym$k m")})"""
-      val dp = new StringBuilder
-      for (i <- 1 to 16) {
-        val cands = (math.max(0, i - 4) until i).map { j =>
-          val k = j * 4 + (i - j)
-          (s"s$j + scl[$k]", s"e$j + scl[$k] * 32 - 1")
-        }
-        def mx(cs: Seq[String]) =
-          if (cs.size == 1) cs.head else cs.mkString("GREATEST(", ", ", ")")
-        dp ++= s""",
-      hd$i AS MATERIALIZED (SELECT *, ${mx(cands.map(_._1))} AS s$i,
-        ${mx(cands.map(_._2))} AS e$i FROM hd${i - 1})"""
-      }
-      val sList = (1 to 16).map(i => s"s$i").mkString("[", ", ", "]")
-      val eList = (1 to 16).map(i => s"e$i").mkString("[", ", ", "]")
-      s"""WITH ${bpeWfCte(trainWhere, 1024)},
-      $bpeIterCtes,
-      $wpIterCtes,
-      hw AS MATERIALIZED (
-        SELECT w, CAST(COUNT(*) AS BIGINT) AS f
-        FROM (SELECT unnest(regexp_split_to_array(trim(lower(text)), '\\s+'))
-            AS w
-          FROM documents WHERE $hoWhere)
-        WHERE w <> '' AND length(w) <= 16 GROUP BY w),
-      $segB,
-      $segY,
-      twf AS MATERIALIZED (
-        SELECT w, CAST(COUNT(*) AS BIGINT) AS f
-        FROM (SELECT unnest(regexp_split_to_array(trim(lower(text)), '\\s+'))
-            AS w
-          FROM documents WHERE $trainWhere)
-        WHERE w <> '' AND length(w) <= 16 GROUP BY w),
-      tcand AS MATERIALIZED (
-        SELECT w, f, (j * 4 + l) AS k, substring(w, CAST(j + 1 AS INT),
-          CAST(l AS INT)) AS p
-        FROM twf, unnest(range(0, length(w))) AS tj(j),
-          unnest(range(1, 5)) AS tl(l)
-        WHERE j + l <= length(w)),
-      tpc AS MATERIALIZED (SELECT p, CAST(SUM(f) AS BIGINT) AS cnt
-        FROM tcand GROUP BY p),
-      ttot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS t FROM tpc),
-      tscs AS MATERIALIZED (SELECT p,
-          CAST(ROUND(ln(CAST(cnt AS DOUBLE) / CAST(t AS DOUBLE)) * 1e4, 0)
-            AS BIGINT) AS sq
-        FROM tpc, ttot),
-      hcand AS MATERIALIZED (
-        SELECT w, (j * 4 + l) AS k, substring(w, CAST(j + 1 AS INT),
-          CAST(l AS INT)) AS p
-        FROM (SELECT w FROM hw), unnest(range(0, length(w))) AS tj(j),
-          unnest(range(1, 5)) AS tl(l)
-        WHERE j + l <= length(w)),
-      hkl AS MATERIALIZED (
-        SELECT c.w, c.k, s.sq FROM hcand c JOIN tscs s USING (p)),
-      hscl AS MATERIALIZED (
-        SELECT ww.w, list(hkl.sq ORDER BY r.k) AS scl
-        FROM (SELECT w FROM hw) ww
-        CROSS JOIN range(1, 65) r(k)
-        LEFT JOIN hkl ON hkl.w = ww.w AND hkl.k = r.k
-        GROUP BY ww.w),
-      hd0 AS (SELECT w, scl, CAST(0 AS BIGINT) AS s0, CAST(0 AS BIGINT) AS e0
-        FROM hscl)
-      $dp,
-      udict AS (SELECT w,
-          32 * ($sList[length(w)]) - ($eList[length(w)]) AS np
-        FROM hd16),
-      res AS (
-        SELECT 'bpe' AS tokenizer, hw.f,
-          CAST(length(hw.w) AS BIGINT) AS len,
-          CAST(len(b.syms) AS BIGINT) AS ns
-        FROM hw JOIN hb$bpeK b USING (w)
-        UNION ALL
-        SELECT 'wordpiece' AS tokenizer, hw.f,
-          CAST(length(hw.w) AS BIGINT) AS len,
-          CAST(len(y.syms) AS BIGINT) AS ns
-        FROM hw JOIN hy$bpeK y USING (w)
-        UNION ALL
-        SELECT 'unigram' AS tokenizer, hw.f,
-          CAST(length(hw.w) AS BIGINT) AS len, u.np AS ns
-        FROM hw LEFT JOIN udict u USING (w))
-      SELECT tokenizer, CAST(SUM(f) AS BIGINT) AS n_words,
-        CAST(SUM(CASE WHEN ns IS NULL THEN f ELSE 0 END) AS BIGINT)
-          AS n_oov,
-        CAST(((2 * SUM(CASE WHEN ns IS NULL THEN f ELSE 0 END) * 10000
-          + SUM(f)) // (2 * SUM(f))) AS DOUBLE) / 1e4 AS oov_rate,
-        CAST(SUM(CASE WHEN ns IS NOT NULL THEN f * ns ELSE 0 END)
-          AS BIGINT) AS n_subtok,
-        CAST(((2 * SUM(CASE WHEN ns IS NOT NULL THEN f * ns ELSE 0 END)
-            * 10000 + SUM(CASE WHEN ns IS NOT NULL THEN f ELSE 0 END))
-          // (2 * SUM(CASE WHEN ns IS NOT NULL THEN f ELSE 0 END)))
-          AS DOUBLE) / 1e4 AS fertility,
-        CAST(((2 * SUM(CASE WHEN ns IS NOT NULL THEN f * len ELSE 0 END)
-            * 10000 + SUM(CASE WHEN ns IS NOT NULL THEN f * ns ELSE 0 END))
-          // (2 * SUM(CASE WHEN ns IS NOT NULL THEN f * ns ELSE 0 END)))
-          AS DOUBLE) / 1e4 AS compression,
-        CAST(((2 * SUM(CASE WHEN ns = 1 THEN f ELSE 0 END) * 10000
-          + SUM(CASE WHEN ns IS NOT NULL THEN f ELSE 0 END))
-          // (2 * SUM(CASE WHEN ns IS NOT NULL THEN f ELSE 0 END)))
-          AS DOUBLE) / 1e4 AS single_rate
-      FROM res GROUP BY tokenizer ORDER BY tokenizer"""
-    },
-    "x164_wilson_bound" -> s"""$clfTrainedSql,
-      zs AS (SELECT doc_id, y,
-          CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
-            AS BIGINT) AS zq
-        FROM tf, w20 GROUP BY doc_id, y),
-      ps AS (SELECT doc_id,
-          CASE WHEN CAST(ROUND((1 / (1 + exp(-(CAST(zq AS DOUBLE)
-            / 1e9)))) * 1e6, 0) AS BIGINT) >= 500000
-          THEN 1 ELSE 0 END AS kept
-        FROM zs),
-      ct AS (SELECT d.source, CAST(COUNT(*) AS BIGINT) AS n,
-          CAST(SUM(p.kept) AS BIGINT) AS k
-        FROM ps p JOIN documents d USING (doc_id) GROUP BY d.source)
-      SELECT source, n AS n_docs, k AS n_kept,
-        CAST(((2 * k * 10000 + n) // (2 * n)) AS DOUBLE) / 1e4
-          AS keep_rate,
-        CAST(CAST(ROUND(((CAST(k AS DOUBLE) / CAST(n AS DOUBLE)
-            + 3.8416 / (2.0 * CAST(n AS DOUBLE))
-            - 1.96 * SQRT(((CAST(k AS DOUBLE) / CAST(n AS DOUBLE))
-                * (1.0 - CAST(k AS DOUBLE) / CAST(n AS DOUBLE))
-                + 3.8416 / (4.0 * CAST(n AS DOUBLE)))
-              / CAST(n AS DOUBLE)))
-            / (1.0 + 3.8416 / CAST(n AS DOUBLE))) * 1e4, 0) AS BIGINT)
-          AS DOUBLE) / 1e4 AS wilson_lb
-      FROM ct ORDER BY source""",
-    "x163_cohen_kappa" -> s"""$clfTrainedSql,
-      zs AS (SELECT doc_id, y,
-          CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
-            AS BIGINT) AS zq
-        FROM tf, w20 GROUP BY doc_id, y),
-      ps AS (SELECT doc_id, y,
-          CASE WHEN CAST(ROUND((1 / (1 + exp(-(CAST(zq AS DOUBLE)
-            / 1e9)))) * 1e6, 0) AS BIGINT) >= 500000
-          THEN 1 ELSE 0 END AS yhat
-        FROM zs),
-      ct AS (SELECT d.source, CAST(COUNT(*) AS BIGINT) AS n,
-          CAST(SUM(CASE WHEN p.y = p.yhat THEN 1 ELSE 0 END) AS BIGINT)
-            AS agree,
-          CAST(SUM(p.y) AS BIGINT) AS p1,
-          CAST(SUM(p.yhat) AS BIGINT) AS p2
-        FROM ps p JOIN documents d USING (doc_id) GROUP BY d.source)
-      SELECT source, n AS n_docs,
-        CAST(((2 * agree * 10000 + n) // (2 * n)) AS DOUBLE) / 1e4 AS po,
-        CAST(((2 * (p1 * p2 + (n - p1) * (n - p2)) * 10000 + n * n)
-          // (2 * n * n)) AS DOUBLE) / 1e4 AS pe,
-        CASE WHEN n * n <> p1 * p2 + (n - p1) * (n - p2) THEN
-          CAST((CASE WHEN n * agree - (p1 * p2 + (n - p1) * (n - p2)) < 0
-              THEN -1 ELSE 1 END)
-            * ((2 * abs((n * agree - (p1 * p2 + (n - p1) * (n - p2)))
-                * 10000) + (n * n - (p1 * p2 + (n - p1) * (n - p2))))
-              // (2 * (n * n - (p1 * p2 + (n - p1) * (n - p2)))))
-            AS DOUBLE) / 1e4 END AS kappa
-      FROM ct ORDER BY source""",
-    "x162_neyman_alloc" -> """
-      WITH q AS (SELECT source, CAST(ROUND(ROUND(
-          LEAST(len(toks) / 50.0, 1.0) * 0.4
-          + (1.0 - LEAST(CAST(length(text) - length(regexp_replace(text,
-                '[^A-Za-z0-9\s]', '', 'g')) AS DOUBLE)
-              / GREATEST(length(text), 1) * 5.0, 1.0)) * 0.3
-          + LEAST(CAST(len(list_filter(toks,
-                t -> t IN ('the', 'a', 'of', 'and'))) AS DOUBLE)
-              / GREATEST(len(toks), 1) * 10.0, 1.0) * 0.3, 4) * 1e4, 0)
-          AS BIGINT) AS q4
-        FROM (SELECT source, text,
-            regexp_split_to_array(trim(text), '\s+') AS toks
-          FROM documents)),
-      st AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n,
-          CAST(SUM(q4) AS BIGINT) AS sq,
-          CAST(SUM(q4 * q4) AS BIGINT) AS sqq
-        FROM q GROUP BY source),
-      sd AS (SELECT source, n,
-          CAST(ROUND(SQRT(CAST(n * sqq - sq * sq AS DOUBLE))
-            / CAST(n AS DOUBLE), 0) AS BIGINT) AS sd4
-        FROM st),
-      aw AS (SELECT source, n, sd4, n * sd4 AS a FROM sd),
-      tt AS (SELECT CAST(SUM(a) AS BIGINT) AS s_tot FROM aw),
-      bs AS (SELECT source, n, sd4, a,
-          (1000 * a) // s_tot AS base, (1000 * a) % s_tot AS rem
-        FROM aw, tt),
-      kk AS (SELECT 1000 - CAST(SUM(base) AS BIGINT) AS k FROM bs),
-      rn AS (SELECT source, n, sd4, a, base,
-          ROW_NUMBER() OVER (ORDER BY rem DESC, source) AS rn
-        FROM bs)
-      SELECT r.source, r.n AS n_docs,
-        CAST(r.sd4 AS DOUBLE) / 1e4 AS sd_quality,
-        CAST(((2 * r.a * 10000 + t.s_tot) // (2 * t.s_tot)) AS DOUBLE)
-          / 1e4 AS weight,
-        r.base + (CASE WHEN r.rn <= kk.k THEN 1 ELSE 0 END) AS alloc
-      FROM rn r, tt t, kk ORDER BY r.source""",
-    "x161_weighted_reservoir" -> s"""
-      WITH keyed AS (SELECT doc_id,
-          CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT)
-            AS n_tok,
-          ${md5Hash32Sql("CAST(doc_id AS VARCHAR)")} AS h
-        FROM documents),
-      kq AS (SELECT doc_id, n_tok,
-          CAST(ROUND(LN((CAST(h AS DOUBLE) + 1.0) / 4294967296.0)
-            / CAST(n_tok AS DOUBLE) * 1e6, 0) AS BIGINT) AS key_q
-        FROM keyed),
-      top AS (SELECT doc_id, n_tok, key_q,
-          ROW_NUMBER() OVER (ORDER BY key_q DESC, doc_id) AS rk
-        FROM kq)
-      SELECT CAST(rk AS BIGINT) AS rk, doc_id, n_tok,
-        CAST(key_q AS DOUBLE) / 1e6 AS aes_key
-      FROM top WHERE rk <= 50 ORDER BY rk""",
-    // x179: 5 unrolled greedy max-coverage steps, every pick and
-    // covered set MATERIALIZED (the x146 greedy discipline).
-    "x179_coverage_select" -> {
-      val steps = new StringBuilder
-      for (i <- 1 to 5) {
-        val notPicked = (1 until i).map(j => s"SELECT source FROM p$j")
-          .mkString(" UNION ALL ")
-        val srcPred = if (i == 1) "1 = 1"
-          else s"source NOT IN ($notPicked)"
-        val covPred = if (i == 1) "1 = 1"
-          else s"g NOT IN (SELECT g FROM c${i - 1})"
-        steps ++= s""",
-      p$i AS MATERIALIZED (SELECT source, CAST(COUNT(*) AS BIGINT)
-          AS gain
-        FROM inc WHERE $srcPred AND $covPred
-        GROUP BY source ORDER BY gain DESC, source LIMIT 1),
-      c$i AS MATERIALIZED (${
-          if (i == 1) "SELECT DISTINCT i.g FROM inc i JOIN p1 ON i.source = p1.source"
-          else s"SELECT g FROM c${i - 1} UNION SELECT i.g FROM inc i JOIN p$i ON i.source = p$i.source"})"""
-      }
-      val outUnion = (1 to 5).map(i =>
-        s"SELECT CAST($i AS BIGINT) AS rk, source, gain FROM p$i")
-        .mkString(" UNION ALL ")
-      s"""
-      WITH inc AS MATERIALIZED (SELECT DISTINCT source, g FROM (
-          SELECT source,
-            unnest(list_transform(range(1, greatest(len(toks) - 2, 0) + 1),
-              i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS g
-          FROM (SELECT source,
-              regexp_split_to_array(trim(text), '\\s+') AS toks
-            FROM documents))),
-      tt AS (SELECT CAST(COUNT(DISTINCT g) AS BIGINT) AS tot FROM inc)
-      $steps,
-      outp AS ($outUnion)
-      SELECT rk, source, gain,
-        CAST(SUM(gain) OVER (ORDER BY rk) AS BIGINT) AS cum_types,
-        CAST(((2 * SUM(gain) OVER (ORDER BY rk) * 10000 + tot)
-          // (2 * tot)) AS DOUBLE) / 1e4 AS coverage
-      FROM outp, tt ORDER BY rk"""
-    },
-    // x178: x14's pair/label CTEs + 10 unrolled integer PageRank
-    // iterations (every step CTE MATERIALIZED — the x146 lesson).
-    "x178_pagerank_canonical" -> {
-      val iters = (1 to 10).map { k => s""",
-      s$k AS MATERIALIZED (SELECT e.b AS doc_id,
-          CAST(SUM(r.r // r.dg) AS BIGINT) AS sq
-        FROM edges2 e JOIN r${k - 1} r ON r.doc_id = e.a GROUP BY e.b),
-      r$k AS MATERIALIZED (SELECT n.doc_id, n.dg,
-          t.a + (2 * 85 * COALESCE(s.sq, 0) + 100) // 200 AS r
-        FROM nodes n LEFT JOIN s$k s USING (doc_id) CROSS JOIN tele t)"""
-      }.mkString
-      s"""$dedupClusterCtes,
-      deg AS (SELECT a AS doc_id, CAST(COUNT(*) AS BIGINT) AS dg
-        FROM edges2 GROUP BY a),
-      nodes AS (SELECT c.doc_id, COALESCE(d.dg, 0) AS dg
-        FROM corpus c LEFT JOIN deg d USING (doc_id)),
-      nct AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
-      tele AS (SELECT (2 * 15 * CAST(1000000000 AS BIGINT) + 100 * n) // (2 * 100 * n)
-          AS a FROM nct),
-      r0 AS MATERIALIZED (SELECT doc_id, dg,
-          (2 * CAST(1000000000 AS BIGINT) + n) // (2 * n) AS r
-        FROM nodes, nct)$iters,
-      fam AS (SELECT l.canonico AS cluster, l.doc_id, r.r
-        FROM labels l JOIN r10 r USING (doc_id)),
-      sz AS (SELECT cluster, CAST(COUNT(*) AS BIGINT) AS size
-        FROM fam GROUP BY cluster),
-      pk AS (SELECT cluster, doc_id AS pr_canonical, r FROM (
-          SELECT cluster, doc_id, r, ROW_NUMBER() OVER
-            (PARTITION BY cluster ORDER BY r DESC, doc_id) AS rk
-          FROM fam)
-        WHERE rk = 1)
-      SELECT s.cluster, s.size, k.pr_canonical,
-        CAST(k.r AS DOUBLE) / 1e9 AS pr_rank,
-        (k.pr_canonical = s.cluster) AS agree
-      FROM sz s JOIN pk k USING (cluster)
-      WHERE s.size >= 2 ORDER BY s.cluster"""
-    },
-    // x177: the NFD fill is a 1-row-per-length-class recursive CTE
-    // whose per-step update is closed-form integer arithmetic (the
-    // k1/c2/per_bin expressions are inlined — LATERAL inside a
-    // recursive member is not portable).
-    "x177_packing_policies" -> """
-      WITH RECURSIVE tl0 AS (SELECT
-          CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT)
-            AS lt
-        FROM documents),
-      tl AS (SELECT least(lt, 256) AS l FROM tl0 WHERE lt > 0),
-      hist AS (SELECT l, CAST(COUNT(*) AS BIGINT) AS c FROM tl GROUP BY l),
-      ord AS (SELECT l, c, ROW_NUMBER() OVER (ORDER BY l DESC) AS rn
-        FROM hist),
-      mxr AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM ord),
-      nfd(rn, bins, rem) AS (
-        SELECT CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT)
-        UNION ALL
-        SELECT o.rn,
-          nfd.bins + CASE WHEN o.c - (CASE WHEN nfd.rem >= o.l
-              THEN least(o.c, nfd.rem // o.l) ELSE 0 END) > 0
-            THEN ((o.c - (CASE WHEN nfd.rem >= o.l
-                THEN least(o.c, nfd.rem // o.l) ELSE 0 END))
-              + (256 // o.l) - 1) // (256 // o.l)
-            ELSE 0 END,
-          CASE WHEN o.c - (CASE WHEN nfd.rem >= o.l
-              THEN least(o.c, nfd.rem // o.l) ELSE 0 END) > 0
-            THEN 256 - ((o.c - (CASE WHEN nfd.rem >= o.l
-                THEN least(o.c, nfd.rem // o.l) ELSE 0 END))
-              - ((((o.c - (CASE WHEN nfd.rem >= o.l
-                  THEN least(o.c, nfd.rem // o.l) ELSE 0 END))
-                + (256 // o.l) - 1) // (256 // o.l)) - 1)
-                * (256 // o.l)) * o.l
-            ELSE nfd.rem - (CASE WHEN nfd.rem >= o.l
-              THEN least(o.c, nfd.rem // o.l) ELSE 0 END) * o.l END
-        FROM nfd JOIN ord o ON o.rn = nfd.rn + 1),
-      nfin AS (SELECT bins FROM nfd, mxr WHERE rn = m),
-      us AS (SELECT CAST(SUM(l * c) AS BIGINT) AS used,
-          CAST(SUM(c) AS BIGINT) AS ndocs FROM hist),
-      tt AS (SELECT CAST(SUM(lt) AS BIGINT) AS t FROM tl0 WHERE lt > 0),
-      outp AS (
-        SELECT 'concat_chunk' AS policy, (t + 255) // 256 AS n_seqs,
-          ((t + 255) // 256) * 256 - t AS n_pad
-        FROM tt
-        UNION ALL
-        SELECT 'nfd', bins, bins * 256 - used FROM nfin, us
-        UNION ALL
-        SELECT 'single_doc', ndocs, ndocs * 256 - used FROM us)
-      SELECT policy, n_seqs, n_pad,
-        CAST(((2 * n_pad * 10000 + n_seqs * 256)
-          // (2 * n_seqs * 256)) AS DOUBLE) / 1e4 AS waste
-      FROM outp ORDER BY policy""",
-    "x176_embed_drift" -> s"""
-      WITH $ivfAssignedCtes,
-      spl AS (SELECT (MAX(vec_id) + 1) // 2 AS sp FROM assigned),
-      asg AS (SELECT cell,
-          CASE WHEN vec_id >= sp THEN 1 ELSE 0 END AS grp
-        FROM assigned, spl),
-      cnts AS (SELECT c.cid AS cell,
-          CAST(COALESCE(SUM(1 - grp), 0) AS BIGINT) AS a,
-          CAST(COALESCE(SUM(grp), 0) AS BIGINT) AS bq
-        FROM cent2 c LEFT JOIN asg ON asg.cell = c.cid GROUP BY c.cid),
-      tot AS (SELECT CAST(SUM(a) AS BIGINT) AS na,
-          CAST(SUM(bq) AS BIGINT) AS nb,
-          CAST(COUNT(*) AS BIGINT) AS k FROM cnts),
-      terms AS (SELECT a, bq, na, nb, k,
-          CAST(ROUND(LN(
-            (CAST(a + 1 AS DOUBLE) / CAST(na + k AS DOUBLE))
-            / ((CAST(a + 1 AS DOUBLE) / CAST(na + k AS DOUBLE)
-              + CAST(bq + 1 AS DOUBLE) / CAST(nb + k AS DOUBLE)) / 2))
-            * 1e6, 0) AS BIGINT) AS tp,
-          CAST(ROUND(LN(
-            (CAST(bq + 1 AS DOUBLE) / CAST(nb + k AS DOUBLE))
-            / ((CAST(a + 1 AS DOUBLE) / CAST(na + k AS DOUBLE)
-              + CAST(bq + 1 AS DOUBLE) / CAST(nb + k AS DOUBLE)) / 2))
-            * 1e6, 0) AS BIGINT) AS tq
-        FROM cnts, tot),
-      agg AS (SELECT CAST(MAX(na) AS BIGINT) AS n_early,
-          CAST(MAX(nb) AS BIGINT) AS n_late,
-          CAST(MAX(k) AS BIGINT) AS kk,
-          CAST(SUM((a + 1) * tp) AS BIGINT) AS hp,
-          CAST(SUM((bq + 1) * tq) AS BIGINT) AS hq
-        FROM terms)
-      SELECT n_early, n_late,
-        CAST((CASE WHEN hp < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(hp) + (n_early + kk)) // (2 * (n_early + kk)))
-          + (CASE WHEN hq < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(hq) + (n_late + kk)) // (2 * (n_late + kk)))
-          AS DOUBLE)
-          / 2e6 / 0.6931471805599453 AS jsd_bits
-      FROM agg""",
-    "x175_drift_c2st" -> s"""$c2stTrainedSql,
-      tst AS (SELECT * FROM tfall
-        WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
-          % 100 >= 90),
-      zt AS (SELECT doc_id, y,
-          CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
-            AS BIGINT) AS zq
-        FROM tst, w20 GROUP BY doc_id, y),
-      pt AS (SELECT doc_id, y,
-          CAST(ROUND((1 / (1 + exp(-(CAST(zq AS DOUBLE) / 1e9)))) * 1e6, 0)
-            AS BIGINT) AS pq
-        FROM zt),
-      ag2 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_test,
-          CAST(SUM(CASE WHEN (pq >= 500000) = (y = 1) THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_corr
-        FROM pt),
-      ac AS (SELECT n_test,
-          (2 * n_corr * 10000 + n_test) // (2 * n_test) AS accq
-        FROM ag2),
-      zz AS (SELECT n_test, accq,
-          CAST(ROUND((2 * (CAST(accq AS DOUBLE) / 1e4) - 1)
-            * SQRT(CAST(n_test AS DOUBLE)) * 1e4, 0) AS BIGINT) AS zq
-        FROM ac)
-      SELECT nn.n AS n_train, n_test,
-        CAST(accq AS DOUBLE) / 1e4 AS test_acc,
-        CAST(zq AS DOUBLE) / 1e4 AS z_score,
-        zq > 19600 AS drift
-      FROM zz, nn""",
-    "x174_token_burstiness" -> """
-      WITH dc AS (SELECT doc_id, w, CAST(COUNT(*) AS BIGINT) AS c
-        FROM (SELECT doc_id,
-            unnest(regexp_split_to_array(trim(text), '\s+')) AS w
-          FROM documents)
-        GROUP BY doc_id, w),
-      ntt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents),
-      mom AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS df,
-          CAST(SUM(c) AS BIGINT) AS cf,
-          CAST(SUM(c * c) AS BIGINT) AS s2
-        FROM dc GROUP BY w),
-      fq AS (SELECT w, df, cf,
-          (CASE WHEN (n * s2 - cf * cf) < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs((n * s2 - cf * cf) * 10000) + n * cf)
-              // (2 * n * cf)) AS fano_q,
-          (2 * cf * 10000 + n) // (2 * n) AS mq
-        FROM mom, ntt),
-      top AS (SELECT * FROM fq ORDER BY fano_q DESC, w LIMIT 30)
-      SELECT w, df, cf, CAST(mq AS DOUBLE) / 1e4 AS mean_per_doc,
-        CAST(fano_q AS DOUBLE) / 1e4 AS fano
-      FROM top ORDER BY fano DESC, w""",
-    "x173_gradient_noise" -> s"""$clfTrainedSql,
-      zs AS (SELECT doc_id, y,
-          CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
-            AS BIGINT) AS zq
-        FROM tf, w20 GROUP BY doc_id, y),
-      ps AS (SELECT doc_id,
-          CAST(ROUND((1 / (1 + exp(-(CAST(zq AS DOUBLE) / 1e9)))) * 1e6, 0)
-            AS BIGINT) AS pq
-        FROM zs),
-      gg AS (SELECT t.bucket,
-          CAST(ROUND(CAST(p.pq - t.y * 1000000 AS DOUBLE) * t.x, 0)
-            AS BIGINT) AS gq
-        FROM tf t JOIN ps p USING (doc_id)),
-      x173n AS (SELECT CAST(COUNT(DISTINCT doc_id) AS HUGEINT) AS n FROM tf),
-      per AS (SELECT bucket, CAST(SUM(CAST(gq AS HUGEINT)) AS HUGEINT)
-            AS s1,
-          CAST(SUM(CAST(gq AS HUGEINT) * gq) AS HUGEINT) AS s2
-        FROM gg GROUP BY bucket),
-      ag AS (SELECT CAST(SUM(n * s2 - s1 * s1) AS HUGEINT) AS t,
-          CAST(SUM(s1 * s1) AS HUGEINT) AS sn,
-          CAST(COUNT(*) AS BIGINT) AS ndims
-        FROM per, x173n)
-      SELECT CAST(n AS BIGINT) AS n_docs, ndims AS n_dims,
-        CAST((2 * t * 1000000 + n * n * 1000000000000)
-          // (2 * n * n * 1000000000000) AS DOUBLE) / 1e6 AS grad_trace,
-        CAST((2 * sn * 1000000 + n * n * 1000000000000)
-          // (2 * n * n * 1000000000000) AS DOUBLE) / 1e6 AS grad_norm2,
-        CASE WHEN sn > 0 THEN
-          CAST((2 * t * 10000 + sn) // (2 * sn) AS DOUBLE) / 1e4
-        END AS gns
-      FROM ag, x173n""",
-    "x172_loo_source_value" -> """
-      WITH dd AS (SELECT source, text,
-          ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
-            % 100 AS b
-        FROM documents),
-      csw AS MATERIALIZED (SELECT w, source,
-          CAST(COUNT(*) AS BIGINT) AS cs
-        FROM (SELECT source,
-            unnest(regexp_split_to_array(trim(text), '\s+')) AS w
-          FROM dd WHERE b < 90)
-        GROUP BY w, source),
-      cw AS MATERIALIZED (SELECT w, CAST(SUM(cs) AS BIGINT) AS c,
-          CAST(COUNT(*) AS BIGINT) AS nsrc
-        FROM csw GROUP BY w),
-      srcs AS MATERIALIZED (SELECT s.source, s.ns,
-          COALESCE(u.us, 0) AS us
-        FROM (SELECT source, CAST(SUM(cs) AS BIGINT) AS ns FROM csw
-          GROUP BY source) s
-        LEFT JOIN (SELECT source, CAST(COUNT(*) AS BIGINT) AS us
-          FROM csw JOIN cw USING (w) WHERE nsrc = 1 GROUP BY source) u
-        USING (source)),
-      gl AS (SELECT CAST(SUM(c) AS BIGINT) AS n,
-          CAST(COUNT(*) + 1 AS BIGINT) AS v FROM cw),
-      hot AS MATERIALIZED (SELECT w, cnt_ho, COALESCE(c, 0) AS c
-        FROM (SELECT w, CAST(COUNT(*) AS BIGINT) AS cnt_ho
-          FROM (SELECT unnest(regexp_split_to_array(trim(text), '\s+'))
-              AS w
-            FROM dd WHERE b >= 90)
-          GROUP BY w)
-        LEFT JOIN cw USING (w)),
-      hn AS (SELECT CAST(SUM(cnt_ho) AS BIGINT) AS hn FROM hot),
-      fl AS (SELECT CAST(SUM(cnt_ho * CAST(ROUND(-LN(
-            CAST(c + 1 AS DOUBLE) / CAST(n + v AS DOUBLE)) * 1e4, 0)
-            AS BIGINT)) AS BIGINT) AS sfull
-        FROM hot, gl),
-      loo AS (SELECT source, CAST(SUM(cnt_ho * CAST(ROUND(-LN(
-            CAST(c - COALESCE(cs, 0) + 1 AS DOUBLE)
-            / CAST(n - ns + v - us AS DOUBLE)) * 1e4, 0) AS BIGINT))
-            AS BIGINT) AS sloo
-        FROM (SELECT h.w, h.cnt_ho, h.c, s.source, s.ns, s.us
-            FROM hot h CROSS JOIN srcs s) x
-        LEFT JOIN csw USING (w, source)
-        CROSS JOIN gl
-        GROUP BY source)
-      SELECT l.source, s.ns AS n_tok_train, s.us AS u_types,
-        CAST(((2 * sfull + hn) // (2 * hn)) AS DOUBLE) / 1e4 AS nll_full,
-        CAST(((2 * sloo + hn) // (2 * hn)) AS DOUBLE) / 1e4 AS nll_loo,
-        CAST(((2 * sloo + hn) // (2 * hn))
-          - ((2 * sfull + hn) // (2 * hn)) AS DOUBLE) / 1e4 AS delta
-      FROM loo l JOIN srcs s USING (source)
-      CROSS JOIN fl CROSS JOIN hn
-      ORDER BY l.source""",
-    "x171_mink_membership" -> """
-      WITH dd AS (SELECT doc_id, text,
-          ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
-            % 100 AS b
-        FROM documents),
-      tr AS (SELECT regexp_split_to_array(trim(text), '\s+') AS toks
-        FROM dd WHERE b < 90),
-      pool AS (SELECT doc_id, text, 'clean' AS cls FROM dd WHERE b >= 90
-        UNION ALL
-        SELECT doc_id + 3000000, text, 'planted' FROM dd
-        WHERE b < 90 AND doc_id % 7 = 0),
-      uni AS (SELECT w1, CAST(COUNT(*) AS BIGINT) AS c1
-        FROM (SELECT unnest(toks) AS w1 FROM tr) GROUP BY w1),
-      scal AS (SELECT CAST(COUNT(*) + 1 AS BIGINT) AS v FROM uni),
-      cnt2 AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS c2 FROM (
-          SELECT unnest(list_transform(range(1, greatest(len(toks) - 1, 0)
-            + 1), i -> toks[i] || ' ' || toks[i+1])) AS g FROM tr)
-        GROUP BY g),
-      pbi AS (SELECT cls, doc_id, i,
-          toks[i-1] || ' ' || toks[i] AS g, toks[i-1] AS w1
-        FROM (SELECT cls, doc_id,
-            regexp_split_to_array(trim(text), '\s+') AS toks
-          FROM pool), unnest(range(2, len(toks) + 1)) AS t(i)),
-      sc AS (SELECT cls, doc_id, i,
-          CAST(ROUND(-LN((CAST(COALESCE(c2, 0) AS DOUBLE) + 1.0)
-            / (CAST(COALESCE(c1, 0) AS DOUBLE) + CAST(v AS DOUBLE)))
-            * 1e4, 0) AS BIGINT) AS lp
-        FROM pbi LEFT JOIN cnt2 USING (g) LEFT JOIN uni USING (w1)
-        CROSS JOIN scal),
-      rk AS (SELECT cls, doc_id, lp,
-          ROW_NUMBER() OVER (PARTITION BY doc_id
-            ORDER BY lp DESC, i) AS rk,
-          COUNT(*) OVER (PARTITION BY doc_id) AS nb
-        FROM sc),
-      pd AS (SELECT cls, doc_id,
-          (2 * CAST(SUM(lp) AS BIGINT) + COUNT(*)) // (2 * COUNT(*))
-            AS mink_q
-        FROM rk WHERE rk * 5 <= nb + 4 GROUP BY cls, doc_id)
-      SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        CAST(((2 * SUM(mink_q) + COUNT(*)) // (2 * COUNT(*)))
-          AS DOUBLE) / 1e4 AS mean_mink_nll,
-        CAST(MIN(mink_q) AS DOUBLE) / 1e4 AS min_mink_nll,
-        CAST(MAX(mink_q) AS DOUBLE) / 1e4 AS max_mink_nll
-      FROM pd GROUP BY cls ORDER BY cls""",
-    // x170: x154's HUGEINT OLS replayed GROUP BY source over the
-    // per-source decile novelty points.
-    "x170_scaling_fit" -> """
-      WITH mx AS (SELECT MAX(doc_id) // 10 + 1 AS width FROM documents),
-      tri AS (SELECT source, doc_id,
-          unnest(list_transform(range(1, greatest(len(toks) - 2, 0) + 1),
-            i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS g
-        FROM (SELECT source, doc_id,
-            regexp_split_to_array(trim(text), '\s+') AS toks
-          FROM documents)),
-      firsts AS (SELECT source, g, MIN(doc_id) AS fd FROM tri
-        GROUP BY source, g),
-      fresh AS MATERIALIZED (SELECT source,
-          fd // (SELECT width FROM mx) AS bucket,
-          CAST(COUNT(*) AS BIGINT) AS m
-        FROM firsts GROUP BY 1, 2),
-      pts AS MATERIALIZED (SELECT source,
-          CAST(bucket * 1000000 AS BIGINT) AS lx,
-          CAST(ROUND(LN(CAST(m AS DOUBLE)) * 1e6, 0) AS BIGINT) AS ly
-        FROM fresh),
-      sums AS MATERIALIZED (SELECT source,
-          CAST(COUNT(*) AS HUGEINT) AS n,
-          CAST(SUM(lx) AS HUGEINT) AS sx, CAST(SUM(ly) AS HUGEINT) AS sy,
-          CAST(SUM(CAST(lx AS HUGEINT) * ly) AS HUGEINT) AS sxy,
-          CAST(SUM(CAST(lx AS HUGEINT) * lx) AS HUGEINT) AS sxx,
-          CAST(COUNT(DISTINCT lx) AS HUGEINT) AS ndx
-        FROM pts GROUP BY source),
-      ft AS (SELECT source, n, sx, sy,
-          CASE WHEN ndx >= 2 THEN
-            (CASE WHEN n * sxy - sx * sy < 0 THEN -1 ELSE 1 END)
-              * ((2 * abs(n * sxy - sx * sy) * 1000000
-                + (n * sxx - sx * sx)) // (2 * (n * sxx - sx * sx)))
-          END AS slope_q
-        FROM sums),
-      ft2 AS (SELECT source, n, slope_q,
-          CASE WHEN slope_q IS NOT NULL THEN
-            (CASE WHEN sy * 1000000 - slope_q * sx < 0 THEN -1 ELSE 1 END)
-              * ((2 * abs(sy * 1000000 - slope_q * sx) + n * 1000000)
-                // (2 * n * 1000000))
-          END AS a_q
-        FROM ft),
-      res AS (SELECT p.source, p.ly,
-          f.a_q + (CASE WHEN f.slope_q * p.lx < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(f.slope_q * p.lx) + 1000000) // 2000000) AS pred
-        FROM pts p JOIN ft2 f USING (source)
-        WHERE f.slope_q IS NOT NULL),
-      yb AS (SELECT source, (CASE WHEN sy < 0 THEN -1 ELSE 1 END)
-          * ((2 * abs(sy) + n) // (2 * n)) AS ybar FROM sums),
-      ss AS (SELECT r.source,
-          CAST(SUM((CAST(r.ly AS HUGEINT) - y.ybar)
-            * (CAST(r.ly AS HUGEINT) - y.ybar)) AS HUGEINT) AS sstot,
-          CAST(SUM((CAST(r.ly AS HUGEINT) - r.pred)
-            * (CAST(r.ly AS HUGEINT) - r.pred)) AS HUGEINT) AS ssres
-        FROM res r JOIN yb y USING (source) GROUP BY r.source)
-      SELECT f.source, CAST(f.n AS BIGINT) AS n_points,
-        CAST(f.slope_q AS DOUBLE) / 1e6 AS slope,
-        CASE WHEN f.slope_q < 0 THEN
-          CAST((2 * 10000000000 + (-f.slope_q)) // (2 * (-f.slope_q))
-            AS DOUBLE) / 1e4 END AS r_star,
-        CASE WHEN f.slope_q < 0 THEN
-          CAST(ROUND(LN(2) * 1e6 / CAST(-f.slope_q AS DOUBLE) * 1e4, 0)
-            AS DOUBLE) / 1e4 END AS half_life,
-        CASE WHEN ss.sstot > 0 THEN
-          CAST((CASE WHEN ss.sstot - ss.ssres < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs((ss.sstot - ss.ssres) * 1000000) + ss.sstot)
-              // (2 * ss.sstot)) AS DOUBLE) / 1e6 END AS r2
-      FROM ft2 f LEFT JOIN ss USING (source) ORDER BY f.source""",
-    // x169: the register power table is a literal list (exact
-    // integers); the alpha constant is CAST to DOUBLE so both engines
-    // scale the same 0.709 double by exact powers of two (a DECIMAL
-    // literal would round differently at the division seam).
-    "x169_hll_distinct" -> {
-      val powList = (0 to 27).map(m => 1L << (27 - m))
-        .mkString("[", ", ", "]")
-      s"""
-      WITH tok AS (SELECT DISTINCT source, w FROM (
-          SELECT source,
-            unnest(regexp_split_to_array(trim(text), '\\s+')) AS w
-          FROM documents)),
-      hv AS (SELECT source, ${md5Hash32Sql("w")} AS h FROM tok),
-      reg AS (SELECT source, h // 67108864 AS j,
-          CASE WHEN h % 67108864 = 0 THEN 27
-               ELSE 27 - length(bin(h % 67108864)) END AS rho
-        FROM hv),
-      mx AS (SELECT source, j, CAST(MAX(rho) AS BIGINT) AS m
-        FROM reg GROUP BY source, j),
-      fl AS (SELECT s.source, r.j, COALESCE(mx.m, 0) AS m0
-        FROM (SELECT DISTINCT source FROM tok) s
-        CROSS JOIN range(0, 64) r(j)
-        LEFT JOIN mx ON mx.source = s.source AND mx.j = r.j),
-      st AS (SELECT source,
-          CAST(SUM($powList[CAST(m0 + 1 AS INT)]) AS BIGINT) AS ssum,
-          CAST(SUM(CASE WHEN m0 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS v
-        FROM fl GROUP BY source),
-      ex AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_exact
-        FROM tok GROUP BY source),
-      es AS (SELECT e.source, e.n_exact, st.v,
-          CAST(ROUND(CAST(0.709 AS DOUBLE) * 4096 * 134217728
-            / CAST(ssum AS DOUBLE) * 1e4, 0) AS BIGINT) AS raw_q
-        FROM ex e JOIN st USING (source)),
-      fin AS (SELECT source, n_exact, v,
-          (v > 0 AND raw_q <= 1600000) AS lc_branch,
-          CASE WHEN v > 0 AND raw_q <= 1600000 THEN
-            CAST(ROUND(64.0 * LN(64.0 / CAST(v AS DOUBLE)) * 1e4, 0)
-              AS BIGINT)
-          ELSE raw_q END AS est_q
-        FROM es)
-      SELECT source, n_exact, v AS n_zero_regs, lc_branch,
-        CAST(est_q AS DOUBLE) / 1e4 AS hll_estimate,
-        CAST(((2 * abs(est_q - n_exact * 10000) + n_exact)
-          // (2 * n_exact)) AS DOUBLE) / 1e4 AS rel_err
-      FROM fin ORDER BY source"""
-    },
-    "x160_kmv_distinct" -> s"""
-      WITH hv AS (SELECT source, ${md5Hash32Sql("w")} AS h
-        FROM (SELECT DISTINCT source, w
-          FROM (SELECT source,
-              unnest(regexp_split_to_array(trim(text), '\\s+')) AS w
-            FROM documents))),
-      exact AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_exact
-        FROM hv GROUP BY source),
-      kth AS (SELECT source, CAST(h AS BIGINT) AS h_k FROM (
-          SELECT source, h,
-            ROW_NUMBER() OVER (PARTITION BY source ORDER BY h) AS rk
-          FROM hv)
-        WHERE rk = 64),
-      es AS (SELECT e.source, e.n_exact,
-          CASE WHEN k.h_k IS NOT NULL THEN
-            (2 * 63 * 4294967296 + GREATEST(k.h_k, 1))
-              // (2 * GREATEST(k.h_k, 1))
-          ELSE e.n_exact END AS est
-        FROM exact e LEFT JOIN kth k USING (source))
-      SELECT source, n_exact, est,
-        CAST(((2 * abs(est - n_exact) * 10000 + n_exact)
-          // (2 * n_exact)) AS DOUBLE) / 1e4 AS rel_error
-      FROM es ORDER BY source""",
-    "x159_tracin_self" -> {
-      val stepUnion = (2 to 20).map(k => s"SELECT doc_id, y, zq FROM z$k")
-        .mkString(" UNION ALL ")
-      s"""$clfTrainedSql,
-      zf AS MATERIALIZED (SELECT doc_id, y,
-          CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
-            AS BIGINT) AS zq
-        FROM tf, w20 GROUP BY doc_id, y),
-      trajz AS ($stepUnion UNION ALL SELECT doc_id, y, zq FROM zf),
-      dqt AS (SELECT doc_id, y,
-          CAST(ROUND((1 / (1 + exp(-(CAST(zq AS DOUBLE) / 1e9))))
-            * 1e6, 0) AS BIGINT) - y * 1000000 AS dq
-        FROM trajz),
-      am AS (SELECT doc_id, y,
-          (2 * CAST(SUM(dq * dq) AS BIGINT) + 1000000) // 2000000 AS a6
-        FROM dqt GROUP BY doc_id, y),
-      xs AS (SELECT doc_id,
-          CAST(SUM(CAST(ROUND(x * x * 1e6, 0) AS BIGINT)) AS BIGINT)
-            AS b6
-        FROM tf GROUP BY doc_id),
-      si AS (SELECT a.doc_id, a.y,
-          (2 * (16 * a.a6 * x.b6) + 1000000) // 2000000 AS si_q
-        FROM am a JOIN xs x USING (doc_id)),
-      top AS (SELECT doc_id, y, si_q,
-          ROW_NUMBER() OVER (ORDER BY si_q DESC, doc_id) AS rk
-        FROM si)
-      SELECT CAST(rk AS BIGINT) AS rk, doc_id, CAST(y AS BIGINT) AS y,
-        CAST(si_q AS DOUBLE) / 1e6 AS self_influence
-      FROM top WHERE rk <= 20 ORDER BY rk"""
-    },
-    "x168_curriculum_schedule" -> {
-      val stepUnion = (2 to 20).map(k => s"SELECT doc_id, y, zq FROM z$k")
-        .mkString(" UNION ALL ")
-      s"""$clfTrainedSql,
-      zf AS MATERIALIZED (SELECT doc_id, y,
-          CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
-            AS BIGINT) AS zq
-        FROM tf, w20 GROUP BY doc_id, y),
-      trajz AS ($stepUnion UNION ALL SELECT doc_id, y, zq FROM zf),
-      ptr AS (SELECT doc_id, y,
-          CASE WHEN y = 1 THEN pq ELSE 1000000 - pq END AS ptq
-        FROM (SELECT doc_id, y,
-            CAST(ROUND((1 / (1 + exp(-(CAST(zq AS DOUBLE) / 1e9))))
-              * 1e6, 0) AS BIGINT) AS pq
-          FROM trajz)),
-      pd AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS k,
-          CAST(SUM(ptq) AS BIGINT) AS sp,
-          CAST(SUM(ptq * ptq) AS BIGINT) AS spp,
-          CAST(SUM(CASE WHEN ptq >= 500000 THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_ok
-        FROM ptr GROUP BY doc_id),
-      cv AS (SELECT doc_id,
-          (2 * sp + k) // (2 * k) AS conf_q,
-          CAST(ROUND(SQRT(CAST(k * spp - sp * sp AS DOUBLE))
-            / CAST(k AS DOUBLE), 0) AS BIGINT) AS vari_q,
-          n_ok
-        FROM pd),
-      st AS (SELECT doc_id, region,
-          CASE WHEN n_ok = 0 THEN 0
-               WHEN region = 'easy_to_learn' THEN 1
-               WHEN region IN ('middle', 'ambiguous') THEN 2
-               ELSE 3 END AS stage
-        FROM (SELECT doc_id, n_ok,
-            CASE WHEN vari_q >= 100000 THEN 'ambiguous'
-                 WHEN conf_q >= 700000 THEN 'easy_to_learn'
-                 WHEN conf_q <= 300000 THEN 'hard_to_learn'
-                 ELSE 'middle' END AS region
-          FROM cv)),
-      ntk AS (SELECT doc_id,
-          CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT)
-            AS t
-        FROM documents),
-      cell AS MATERIALIZED (SELECT stage, region,
-          CAST(COUNT(*) AS BIGINT) AS n_docs,
-          CAST(SUM(t) AS BIGINT) AS n_tok
-        FROM st JOIN ntk USING (doc_id) GROUP BY stage, region),
-      tot AS (SELECT
-          SUM(CASE WHEN stage >= 1 THEN n_tok ELSE 0 END) // 2 AS b,
-          CAST(SUM(CASE WHEN stage >= 1 THEN n_tok ELSE 0 END) AS BIGINT)
-            AS kt
-        FROM cell),
-      bs AS MATERIALIZED (SELECT stage, region, n_docs, n_tok, b,
-          CASE WHEN stage >= 1 THEN (b * n_tok) // kt ELSE 0 END AS basq,
-          CASE WHEN stage >= 1 THEN (b * n_tok) % kt ELSE -1 END AS rem
-        FROM cell, tot),
-      kk AS (SELECT MAX(b) - SUM(basq) AS k FROM bs)
-      SELECT CAST(stage AS BIGINT) AS stage, region, n_docs, n_tok,
-        CAST(basq + CASE WHEN rem >= 0 AND ROW_NUMBER()
-          OVER (ORDER BY rem DESC, stage, region) <= k
-          THEN 1 ELSE 0 END AS BIGINT) AS alloc
-      FROM bs, kk ORDER BY stage, region"""
-    },
-    "x158_forgetting_events" -> {
-      val stepUnion = (2 to 20)
-        .map(k => s"SELECT doc_id, y, CAST(${k - 1} AS BIGINT) AS step, zq FROM z$k")
-        .mkString(" UNION ALL ")
-      s"""$clfTrainedSql,
-      zf AS MATERIALIZED (SELECT doc_id, y,
-          CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
-            AS BIGINT) AS zq
-        FROM tf, w20 GROUP BY doc_id, y),
-      trajz AS ($stepUnion
-        UNION ALL SELECT doc_id, y, CAST(20 AS BIGINT), zq FROM zf),
-      okt AS (SELECT doc_id, y, step,
-          (CASE WHEN y = 1 THEN pq ELSE 1000000 - pq END) >= 500000 AS ok
-        FROM (SELECT doc_id, y, step,
-            CAST(ROUND((1 / (1 + exp(-(CAST(zq AS DOUBLE) / 1e9))))
-              * 1e6, 0) AS BIGINT) AS pq
-          FROM trajz)),
-      fg AS (SELECT doc_id, y, ok,
-          CASE WHEN LAG(ok) OVER (PARTITION BY doc_id ORDER BY step)
-            AND NOT ok THEN 1 ELSE 0 END AS forgot
-        FROM okt),
-      pd AS (SELECT doc_id, y,
-          CAST(SUM(CASE WHEN ok THEN 1 ELSE 0 END) AS BIGINT) AS n_ok,
-          CAST(SUM(forgot) AS BIGINT) AS forgets
-        FROM fg GROUP BY doc_id, y)
-      SELECT CAST(y AS BIGINT) AS y, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        CAST(SUM(CASE WHEN n_ok = 0 THEN 1 ELSE 0 END) AS BIGINT)
-          AS n_never_learned,
-        CAST(SUM(CASE WHEN n_ok > 0 AND forgets = 0 THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_unforgettable,
-        CAST(SUM(CASE WHEN forgets > 0 THEN 1 ELSE 0 END) AS BIGINT)
-          AS n_forgotten,
-        CAST(((2 * SUM(forgets) * 10000 + COUNT(*)) // (2 * COUNT(*)))
-          AS DOUBLE) / 1e4 AS mean_forgets,
-        CAST(MAX(forgets) AS BIGINT) AS max_forgets
-      FROM pd GROUP BY y ORDER BY y"""
-    },
-    "x157_cartography" -> {
-      val stepUnion = (2 to 20).map(k => s"SELECT doc_id, y, zq FROM z$k")
-        .mkString(" UNION ALL ")
-      s"""$clfTrainedSql,
-      zf AS MATERIALIZED (SELECT doc_id, y,
-          CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
-            AS BIGINT) AS zq
-        FROM tf, w20 GROUP BY doc_id, y),
-      trajz AS ($stepUnion UNION ALL SELECT doc_id, y, zq FROM zf),
-      ptr AS (SELECT doc_id, y,
-          CASE WHEN y = 1 THEN pq ELSE 1000000 - pq END AS ptq
-        FROM (SELECT doc_id, y,
-            CAST(ROUND((1 / (1 + exp(-(CAST(zq AS DOUBLE) / 1e9))))
-              * 1e6, 0) AS BIGINT) AS pq
-          FROM trajz)),
-      pd AS (SELECT doc_id, y, CAST(COUNT(*) AS BIGINT) AS k,
-          CAST(SUM(ptq) AS BIGINT) AS sp,
-          CAST(SUM(ptq * ptq) AS BIGINT) AS spp
-        FROM ptr GROUP BY doc_id, y),
-      cv AS (SELECT doc_id, y,
-          (2 * sp + k) // (2 * k) AS conf_q,
-          CAST(ROUND(SQRT(CAST(k * spp - sp * sp AS DOUBLE))
-            / CAST(k AS DOUBLE), 0) AS BIGINT) AS vari_q
-        FROM pd),
-      rg AS (SELECT y,
-          CASE WHEN vari_q >= 100000 THEN 'ambiguous'
-               WHEN conf_q >= 700000 THEN 'easy_to_learn'
-               WHEN conf_q <= 300000 THEN 'hard_to_learn'
-               ELSE 'middle' END AS region,
-          conf_q, vari_q
-        FROM cv)
-      SELECT region, CAST(y AS BIGINT) AS y,
-        CAST(COUNT(*) AS BIGINT) AS n_docs,
-        CAST(((2 * SUM(conf_q) + COUNT(*)) // (2 * COUNT(*)))
-          AS DOUBLE) / 1e6 AS mean_conf,
-        CAST(((2 * SUM(vari_q) + COUNT(*)) // (2 * COUNT(*)))
-          AS DOUBLE) / 1e6 AS mean_vari
-      FROM rg GROUP BY region, y ORDER BY region, y"""
-    },
-    "x150_el2n_prune" -> s"""$clfTrainedSql,
-      zs AS (SELECT doc_id, y,
-          CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
-            AS BIGINT) AS zq
-        FROM tf, w20 GROUP BY doc_id, y),
-      ps AS (SELECT doc_id, y,
-          CAST(ROUND((1 / (1 + exp(-(CAST(zq AS DOUBLE) / 1e9)))) * 1e6, 0)
-            AS BIGINT) AS pq
-        FROM zs),
-      sc AS MATERIALIZED (SELECT d.source, p.y,
-          abs(p.pq - p.y * 1000000) AS el2n_q
-        FROM ps p JOIN documents d USING (doc_id)),
-      hist AS (SELECT el2n_q, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM sc GROUP BY el2n_q),
-      cum AS (SELECT el2n_q, SUM(cnt) OVER (ORDER BY el2n_q) AS cum
-        FROM hist),
-      nn2 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM sc),
-      cut AS (SELECT MIN(el2n_q) AS cut20 FROM cum, nn2 WHERE cum * 5 >= n),
-      ag AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-          CAST(SUM(CASE WHEN el2n_q < cut20 THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_pruned,
-          CAST(SUM(y) AS BIGINT) AS n_pos,
-          CAST(SUM(CASE WHEN el2n_q >= cut20 THEN y ELSE 0 END) AS BIGINT)
-            AS pos_kept
-        FROM sc, cut GROUP BY source)
-      SELECT source, n_docs, n_pruned,
-        CAST(((2 * n_pruned * 10000 + n_docs) // (2 * n_docs)) AS DOUBLE)
-          / 1e4 AS prune_rate,
-        CAST(((2 * n_pos * 10000 + n_docs) // (2 * n_docs)) AS DOUBLE)
-          / 1e4 AS pos_share_before,
-        CASE WHEN n_docs > n_pruned THEN
-          CAST(((2 * pos_kept * 10000 + (n_docs - n_pruned))
-            // (2 * (n_docs - n_pruned))) AS DOUBLE) / 1e4 END
-          AS pos_share_after
-      FROM ag ORDER BY source""",
-    "x135_unigram_em" -> {
-      // one decode chain (suffix DP + leftmost walk) under `scoresCte`,
-      // mirroring unigramDecode column-for-column; CTE prefix c<chain>
-      def decodeSql(chain: Int, scoresCte: String): String = {
-        val c = s"c$chain"
-        val sb = new StringBuilder
-        sb ++= s""",
-      ${c}kl AS MATERIALIZED (SELECT cd.w, cd.k, s.sq
-        FROM ucand cd JOIN $scoresCte s USING (p)),
-      ${c}scl AS MATERIALIZED (
-        SELECT ww.w, list(COALESCE(kl.sq, $NegSq) ORDER BY r.k) AS scl
-        FROM uwords ww CROSS JOIN range(1, 65) r(k)
-        LEFT JOIN ${c}kl kl ON kl.w = ww.w AND kl.k = r.k
-        GROUP BY ww.w),
-      ${c}d0 AS (SELECT w, scl, CAST(0 AS BIGINT) AS f0 FROM ${c}scl)"""
-        for (t <- 1 to 16) {
-          val cands = (1 to math.min(4, t)).map { l =>
-            s"32 * scl[(length(w) - $t) * 4 + $l] - 1 + f${t - l}" }
-          val mx = if (cands.size == 1) cands.head
-            else cands.mkString("GREATEST(", ", ", ")")
-          sb ++= s""",
-      ${c}d$t AS MATERIALIZED (SELECT *, CASE WHEN $t <= length(w)
-        THEN $mx ELSE ${NegSq * 32L} END AS f$t FROM ${c}d${t - 1})"""
-        }
-        val faList = (0 to 16).map(t => s"f$t").mkString("[", ", ", "]")
-        sb ++= s""",
-      ${c}u0 AS (SELECT w, scl, $faList AS fa,
-        CAST(length(w) AS BIGINT) AS r0 FROM ${c}d16)"""
-        for (u <- 1 to 16) {
-          val r = s"r${u - 1}"
-          def ok(l: Int) =
-            s"""($l <= $r AND 32 * scl[CAST((length(w) - $r) * 4 + $l AS INT)]
-            - 1 + fa[CAST(GREATEST($r - $l, 0) + 1 AS INT)]
-            = fa[CAST($r + 1 AS INT)])"""
-          sb ++= s""",
-      ${c}ul$u AS (SELECT *, CASE WHEN $r > 0 THEN (CASE
-          WHEN ${ok(1)} THEN 1 WHEN ${ok(2)} THEN 2 WHEN ${ok(3)} THEN 3
-          ELSE 4 END) END AS l$u
-        FROM ${c}u${u - 1}),
-      ${c}u$u AS (SELECT *, CASE WHEN $r > 0 THEN substring(w,
-          CAST(length(w) - $r + 1 AS INT), CAST(l$u AS INT)) END AS p$u,
-        $r - COALESCE(l$u, 0) AS r$u FROM ${c}ul$u)"""
-        }
-        val pList = (1 to 16).map(u => s"p$u").mkString("[", ", ", "]")
-        sb ++= s""",
-      ${c}dec AS MATERIALIZED (SELECT w,
-        list_filter($pList, x -> x IS NOT NULL) AS pieces,
-        CAST(len(list_filter($pList, x -> x IS NOT NULL)) AS BIGINT) AS np,
-        CAST((fa[CAST(length(w) + 1 AS INT)]
-          + len(list_filter($pList, x -> x IS NOT NULL))) // 32 AS BIGINT)
-          AS wq
-        FROM ${c}u16)"""
-        sb.toString
-      }
-      def countsSql(chain: Int): String = s""",
-      c${chain}cnt AS MATERIALIZED (SELECT u.p,
-          CAST(SUM(wf.f) AS BIGINT) AS cnt
-        FROM c${chain}dec d JOIN wf USING (w), unnest(d.pieces) AS u(p)
-        GROUP BY u.p),
-      c${chain}scs AS MATERIALIZED (SELECT p,
-          CAST(ROUND(ln(CAST(cnt AS DOUBLE) / CAST(tt.t AS DOUBLE)) * 1e4, 0)
-            AS BIGINT) AS sq
-        FROM c${chain}cnt, (SELECT CAST(SUM(cnt) AS BIGINT) AS t
-          FROM c${chain}cnt) tt)"""
-      s"""WITH wf AS MATERIALIZED (
-        SELECT w, CAST(COUNT(*) AS BIGINT) AS f
-        FROM (SELECT unnest(regexp_split_to_array(trim(lower(text)), '\\s+'))
-            AS w
-          FROM documents)
-        WHERE w <> '' AND length(w) <= 16 GROUP BY w),
-      uwords AS MATERIALIZED (SELECT DISTINCT w FROM wf),
-      ucand AS MATERIALIZED (
-        SELECT w, (j * 4 + l) AS k, substring(w, CAST(j + 1 AS INT),
-          CAST(l AS INT)) AS p
-        FROM uwords, unnest(range(0, length(w))) AS tj(j),
-          unnest(range(1, 5)) AS tl(l)
-        WHERE j + l <= length(w)),
-      upc AS MATERIALIZED (SELECT p, CAST(SUM(f) AS BIGINT) AS cnt
-        FROM ucand JOIN wf USING (w) GROUP BY p),
-      scs0 AS MATERIALIZED (SELECT p,
-          CAST(ROUND(ln(CAST(cnt AS DOUBLE) / CAST(tt.t AS DOUBLE)) * 1e4, 0)
-            AS BIGINT) AS sq
-        FROM upc, (SELECT CAST(SUM(cnt) AS BIGINT) AS t FROM upc) tt)
-      ${decodeSql(1, "scs0")}${countsSql(1)}
-      ${decodeSql(2, "c1scs")}${countsSql(2)},
-      uchars AS (SELECT DISTINCT p FROM ucand WHERE k % 4 = 1),
-      usng AS (SELECT c.p, COALESCE(n.cnt, 0) + 1 AS cnt
-        FROM uchars c LEFT JOIN c2cnt n USING (p)),
-      umul AS (SELECT p, cnt FROM (SELECT p, cnt,
-          ROW_NUMBER() OVER (ORDER BY cnt DESC, p) AS rk
-        FROM c2cnt WHERE length(p) > 1) WHERE rk <= 16),
-      upv AS MATERIALIZED (SELECT p, CAST(cnt AS BIGINT) AS cnt FROM usng
-        UNION ALL SELECT p, CAST(cnt AS BIGINT) AS cnt FROM umul),
-      upscs AS MATERIALIZED (SELECT p,
-          CAST(ROUND(ln(CAST(cnt AS DOUBLE) / CAST(tt.t AS DOUBLE)) * 1e4, 0)
-            AS BIGINT) AS sq
-        FROM upv, (SELECT CAST(SUM(cnt) AS BIGINT) AS t FROM upv) tt),
-      unv AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_vocab FROM upv)
-      ${decodeSql(3, "upscs")},
-      usw AS MATERIALIZED (
-        SELECT source, w, CAST(COUNT(*) AS BIGINT) AS f
-        FROM (SELECT source,
-            unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS w
-          FROM documents)
-        WHERE w <> '' AND length(w) <= 16 GROUP BY source, w)
-      SELECT sw.source, CAST(SUM(sw.f) AS BIGINT) AS n_words,
-        CAST(SUM(sw.f * d.np) AS BIGINT) AS n_pieces,
-        CAST(((2 * SUM(sw.f * d.np) * 10000 + SUM(sw.f))
-          // (2 * SUM(sw.f))) AS DOUBLE) / 1e4 AS fertility,
-        CAST(((2 * SUM(sw.f * (-d.wq)) + SUM(sw.f))
-          // (2 * SUM(sw.f))) AS DOUBLE) / 1e4 AS mean_word_nll,
-        unv.n_vocab
-      FROM usw sw JOIN c3dec d USING (w) CROSS JOIN unv
-      GROUP BY sw.source, unv.n_vocab ORDER BY sw.source"""
-    },
-    "x117_unigram_viterbi" -> {
-      val dp = new StringBuilder
-      for (i <- 1 to 16) {
-        val cands = (math.max(0, i - 4) until i).map { j =>
-          val k = j * 4 + (i - j)
-          (s"s$j + scl[$k]", s"e$j + scl[$k] * 32 - 1")
-        }
-        def mx(cs: Seq[String]) =
-          if (cs.size == 1) cs.head else cs.mkString("GREATEST(", ", ", ")")
-        dp ++= s""",
-      d$i AS MATERIALIZED (SELECT *, ${mx(cands.map(_._1))} AS s$i,
-        ${mx(cands.map(_._2))} AS e$i FROM d${i - 1})"""
-      }
-      val sList = (1 to 16).map(i => s"s$i").mkString("[", ", ", "]")
-      val eList = (1 to 16).map(i => s"e$i").mkString("[", ", ", "]")
-      s"""WITH wf AS MATERIALIZED (
-        SELECT w, CAST(COUNT(*) AS BIGINT) AS f
-        FROM (SELECT unnest(regexp_split_to_array(trim(lower(text)), '\\s+'))
-            AS w
-          FROM documents)
-        WHERE w <> '' AND length(w) <= 16 GROUP BY w),
-      sw AS MATERIALIZED (
-        SELECT source, w, CAST(COUNT(*) AS BIGINT) AS f
-        FROM (SELECT source,
-            unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS w
-          FROM documents)
-        WHERE w <> '' AND length(w) <= 16 GROUP BY source, w),
-      cand AS MATERIALIZED (
-        SELECT w, f, (j * 4 + l) AS k, substring(w, CAST(j + 1 AS INT),
-          CAST(l AS INT)) AS p
-        FROM wf, unnest(range(0, length(w))) AS tj(j),
-          unnest(range(1, 5)) AS tl(l)
-        WHERE j + l <= length(w)),
-      pc AS MATERIALIZED (SELECT p, CAST(SUM(f) AS BIGINT) AS cnt
-        FROM cand GROUP BY p),
-      tot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS t FROM pc),
-      scs AS MATERIALIZED (SELECT p,
-          CAST(ROUND(ln(CAST(cnt AS DOUBLE) / CAST(t AS DOUBLE)) * 1e4, 0)
-            AS BIGINT) AS sq
-        FROM pc, tot),
-      kl AS MATERIALIZED (
-        SELECT c.w, c.k, s.sq FROM cand c JOIN scs s USING (p)),
-      sclt AS MATERIALIZED (
-        SELECT ww.w, list(kl.sq ORDER BY r.k) AS scl
-        FROM (SELECT DISTINCT w FROM wf) ww
-        CROSS JOIN range(1, 65) r(k)
-        LEFT JOIN kl ON kl.w = ww.w AND kl.k = r.k
-        GROUP BY ww.w),
-      d0 AS (SELECT w, scl, CAST(0 AS BIGINT) AS s0, CAST(0 AS BIGINT) AS e0
-        FROM sclt)
-      $dp,
-      dict AS (SELECT w, $sList[length(w)] AS wq,
-          32 * ($sList[length(w)]) - ($eList[length(w)]) AS np
-        FROM d16)
-      SELECT sw.source, CAST(SUM(sw.f) AS BIGINT) AS n_words,
-        CAST(SUM(sw.f * d.np) AS BIGINT) AS n_pieces,
-        CAST(((2 * SUM(sw.f * d.np) * 10000 + SUM(sw.f))
-          // (2 * SUM(sw.f))) AS DOUBLE) / 1e4 AS fertility,
-        CAST(((2 * SUM(sw.f * (-d.wq)) + SUM(sw.f))
-          // (2 * SUM(sw.f))) AS DOUBLE) / 1e4 AS mean_word_nll
-      FROM sw JOIN dict d USING (w)
-      GROUP BY sw.source ORDER BY sw.source"""
-    },
-    "x107_bpe_segment" -> {
-      val segCtes = new StringBuilder
-      segCtes ++= """sw AS MATERIALIZED (
-          SELECT source, w, CAST(COUNT(*) AS BIGINT) AS f
-          FROM (SELECT source,
-                unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS w
-                FROM documents)
-          WHERE w <> '' GROUP BY source, w),
-        g0 AS MATERIALIZED (SELECT w, CAST(0 AS BIGINT) AS f,
-          list_transform(range(1, length(w)+1), i ->
-            substring(w, CAST(i AS INT), 1)) AS syms
-          FROM (SELECT DISTINCT w FROM sw))"""
-      for (k <- 1 to bpeK)
-        segCtes ++= s""",
-        g$k AS MATERIALIZED (${bpeApplySql(s"g${k - 1}, m$k m")})"""
-      s"""WITH $bpeTrainCtes, $segCtes,
-        nsub AS (SELECT w, CAST(len(syms) AS BIGINT) AS n_sub FROM g$bpeK)
-        SELECT sw.source, CAST(SUM(sw.f) AS BIGINT) AS n_words,
-          CAST(SUM(sw.f * n.n_sub) AS BIGINT) AS n_subtok,
-          CAST(SUM(CASE WHEN n.n_sub = 1 THEN sw.f ELSE 0 END) AS BIGINT)
-            AS n_single,
-          CAST(((2 * SUM(sw.f * n.n_sub) * 10000 + SUM(sw.f))
-            // (2 * SUM(sw.f))) AS DOUBLE) / 1e4 AS fertility
-        FROM sw JOIN nsub n USING (w) GROUP BY sw.source ORDER BY sw.source"""
-    },
-    "x137_exact_substring" -> """
-      WITH t AS (SELECT doc_id,
-          regexp_split_to_array(trim('portal ' || source
-            || ' official mirror terms of service apply'
-            || ' all rights reserved contact webmaster ' || text),
-            '\s+') AS toks
-        FROM documents),
-      g AS (SELECT doc_id, r.i - 1 AS gi,
-          md5(array_to_string(list_slice(toks, CAST(r.i AS INT),
-            CAST(r.i + 4 AS INT)), ' ')) AS fp
-        FROM t, unnest(range(1, len(toks) - 3)) AS r(i)),
-      dup AS (SELECT fp FROM g GROUP BY fp HAVING COUNT(*) >= 2),
-      ds AS (SELECT g.doc_id, g.gi FROM g JOIN dup USING (fp)),
-      tok AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tok, r.j AS j,
-          toks[CAST(r.j + 1 AS INT)] AS tk
-        FROM t, unnest(range(0, len(toks))) AS r(j)),
-      mk AS (SELECT tok.*, CASE WHEN ds.gi IS NOT NULL THEN 1 ELSE 0 END
-          AS isd
-        FROM tok LEFT JOIN ds ON ds.doc_id = tok.doc_id AND ds.gi = tok.j),
-      cv AS (SELECT *, MAX(CASE WHEN isd = 1 THEN j + 4 END)
-          OVER (PARTITION BY doc_id ORDER BY j ROWS UNBOUNDED PRECEDING)
-          AS reach
-        FROM mk),
-      cf AS MATERIALIZED (SELECT *,
-          (reach IS NOT NULL AND reach >= j) AS covered,
-          CASE WHEN (reach IS NOT NULL AND reach >= j)
-            AND NOT COALESCE(LAG(reach IS NOT NULL AND reach >= j)
-              OVER (PARTITION BY doc_id ORDER BY j), FALSE)
-            THEN 1 ELSE 0 END AS st
-        FROM cv),
-      ci AS MATERIALIZED (SELECT *, SUM(st)
-          OVER (PARTITION BY doc_id ORDER BY j ROWS UNBOUNDED PRECEDING)
-          AS isl
-        FROM cf),
-      sp AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_spans,
-          CAST(MAX(slen) AS BIGINT) AS max_span,
-          CAST(SUM(slen) AS BIGINT) AS n_dup_tok
-        FROM (SELECT doc_id, isl, COUNT(*) AS slen FROM ci
-          WHERE covered GROUP BY doc_id, isl)
-        GROUP BY doc_id),
-      cl AS (SELECT doc_id, MAX(n_tok) AS n_tok,
-          COALESCE(array_to_string(list(tk ORDER BY j)
-            FILTER (WHERE NOT covered), ' '), '') AS clean
-        FROM ci GROUP BY doc_id)
-      SELECT cl.doc_id, CAST(cl.n_tok AS BIGINT) AS n_tok,
-        COALESCE(sp.n_dup_tok, 0) AS n_dup_tok,
-        CAST(((2 * COALESCE(sp.n_dup_tok, 0) * 10000 + cl.n_tok)
-          // (2 * cl.n_tok)) AS DOUBLE) / 1e4 AS dup_rate,
-        COALESCE(sp.n_spans, 0) AS n_spans,
-        COALESCE(sp.max_span, 0) AS max_span,
-        md5(clean) AS clean_md5,
-        CASE WHEN length(clean) = 0 THEN CAST(0 AS BIGINT)
-          ELSE CAST(len(regexp_split_to_array(clean, '\s+')) AS BIGINT) END
-          AS clean_n_tok
-      FROM cl LEFT JOIN sp USING (doc_id) ORDER BY cl.doc_id""",
-    "x112_firstocc_dedup" -> """
-      WITH t AS (SELECT doc_id,
-          regexp_split_to_array(trim('portal ' || source
-            || ' official mirror terms of service apply'
-            || ' all rights reserved contact webmaster ' || text),
-            '\s+') AS toks
-        FROM documents),
-      b AS (SELECT doc_id, toks,
-          unnest(range(0, (len(toks) + 7) // 8)) AS g FROM t),
-      seg AS (SELECT doc_id, g,
-          array_to_string(list_slice(toks, g * 8 + 1, g * 8 + 8), ' ')
-            AS segtxt
-        FROM b),
-      sf AS (SELECT doc_id, g, segtxt, md5(segtxt) AS fp FROM seg),
-      fo AS (SELECT fp, doc_id AS fdoc, g AS fg FROM (
-          SELECT fp, doc_id, g,
-            ROW_NUMBER() OVER (PARTITION BY fp ORDER BY doc_id, g) AS rk
-          FROM sf)
-        WHERE rk = 1),
-      agg AS (SELECT s.doc_id, COUNT(*) AS n_seg,
-          SUM(CASE WHEN s.doc_id = f.fdoc AND s.g = f.fg
-            THEN 0 ELSE 1 END) AS n_drop,
-          COALESCE(array_to_string(list(s.segtxt ORDER BY s.g)
-            FILTER (WHERE s.doc_id = f.fdoc AND s.g = f.fg), ' '), '')
-            AS clean
-        FROM sf s JOIN fo f USING (fp) GROUP BY s.doc_id)
-      SELECT doc_id, CAST(n_seg AS BIGINT) AS n_seg,
-        CAST(n_drop AS BIGINT) AS n_drop,
-        md5(clean) AS clean_md5,
-        CASE WHEN length(clean) = 0 THEN CAST(0 AS BIGINT)
-          ELSE CAST(len(regexp_split_to_array(clean, '\s+')) AS BIGINT) END
-          AS clean_n_tok
-      FROM agg ORDER BY doc_id""",
-    "x82_quality_percentile" -> """
-      WITH q AS (SELECT doc_id, source,
-          ROUND(LEAST(len(toks) / 50.0, 1.0) * 0.4
-            + (1.0 - LEAST((CAST(length(text) - length(regexp_replace(text,
-                  '[^A-Za-z0-9\s]', '', 'g')) AS DOUBLE)
-                / GREATEST(length(text), 1)) * 5.0, 1.0)) * 0.3
-            + LEAST((CAST(len(list_filter(toks,
-                  t -> t IN ('the','a','of','and'))) AS DOUBLE)
-                / GREATEST(len(toks), 1)) * 10.0, 1.0) * 0.3, 4) AS quality
-        FROM (SELECT doc_id, source, text,
-                regexp_split_to_array(trim(text), '\s+') AS toks
-              FROM documents))
-      SELECT doc_id, source, quality,
-        PERCENT_RANK() OVER (PARTITION BY source ORDER BY quality)
-          AS pct_rank,
-        PERCENT_RANK() OVER (PARTITION BY source ORDER BY quality) >= 0.25
-          AS keep_global_p25
-      FROM q ORDER BY doc_id""",
-    "x81_corpus_card" -> s"""
-      WITH q AS (SELECT source, lang, text,
-          md5(lower(trim(text))) AS f,
-          regexp_split_to_array(trim(text), '\\s+') AS toks,
-          CAST(ROUND(ROUND(LEAST(len(regexp_split_to_array(trim(text),
-                '\\s+')) / 50.0, 1.0) * 0.4
-            + (1.0 - LEAST((CAST(length(text) - length(regexp_replace(text,
-                  '[^A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)
-                / GREATEST(length(text), 1)) * 5.0, 1.0)) * 0.3
-            + LEAST((CAST(len(list_filter(regexp_split_to_array(trim(text),
-                  '\\s+'), t -> t IN ('the','a','of','and'))) AS DOUBLE)
-                / GREATEST(len(regexp_split_to_array(trim(text), '\\s+')), 1))
-              * 10.0, 1.0) * 0.3, 4) * 1e4, 0) AS BIGINT) AS q4
-        FROM documents),
-      base AS (SELECT source, COUNT(*) AS n_docs,
-          CAST(SUM(len(toks)) AS BIGINT) AS n_tok,
-          CAST(SUM(strlen(text)) AS BIGINT) AS n_bytes,
-          CAST(SUM(q4) AS BIGINT) AS sq4,
-          COUNT(DISTINCT f) AS n_unique,
-          CAST(SUM(${md5Hash32Sql("f")}) AS BIGINT) AS content_checksum
-        FROM q GROUP BY source),
-      lc AS (SELECT source, lang, COUNT(*) AS c FROM q GROUP BY source, lang),
-      lt AS (SELECT source, SUM(c) AS n FROM lc GROUP BY source),
-      lh AS (SELECT lc.source,
-          SUM(lc.c * CAST(ROUND(LN(CAST(lc.c AS DOUBLE)
-            / CAST(lt.n AS DOUBLE)) * 1e6, 0) AS BIGINT)) AS sh,
-          MAX(lt.n) AS n
-        FROM lc JOIN lt ON lc.source = lt.source GROUP BY lc.source),
-      ent AS (SELECT source,
-          CAST((CASE WHEN -sh < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(-sh) + n) // (2 * n)) AS DOUBLE) / 1e6
-            / 0.6931471805599453 AS lang_entropy_bits
-        FROM lh)
-      SELECT b.source, CAST(b.n_docs AS BIGINT) AS n_docs, b.n_tok,
-        b.n_bytes,
-        CAST((2 * b.sq4 * 100 + b.n_docs) // (2 * b.n_docs) AS DOUBLE) / 1e6
-          AS mean_quality,
-        CAST((2 * (b.n_docs - b.n_unique) * 10000 + b.n_docs)
-          // (2 * b.n_docs) AS DOUBLE) / 1e4 AS dup_rate,
-        e.lang_entropy_bits, b.content_checksum
-      FROM base b JOIN ent e ON b.source = e.source
-      ORDER BY b.source""",
-    "x80_quality_trend" -> """
-      WITH q AS (SELECT source, doc_id AS x,
-          CAST(ROUND(ROUND(LEAST(len(toks) / 50.0, 1.0) * 0.4
-            + (1.0 - LEAST((CAST(length(text) - length(regexp_replace(text,
-                  '[^A-Za-z0-9\s]', '', 'g')) AS DOUBLE)
-                / GREATEST(length(text), 1)) * 5.0, 1.0)) * 0.3
-            + LEAST((CAST(len(list_filter(toks,
-                  t -> t IN ('the','a','of','and'))) AS DOUBLE)
-                / GREATEST(len(toks), 1)) * 10.0, 1.0) * 0.3, 4) * 1e4, 0)
-            AS BIGINT) AS q4
-        FROM (SELECT source, doc_id, text,
-                regexp_split_to_array(trim(text), '\s+') AS toks
-              FROM documents)),
-      m AS (SELECT source, COUNT(*) AS n, SUM(x) AS sx,
-          SUM(x * x) AS sxx, SUM(q4) AS sy, SUM(x * q4) AS sxy
-        FROM q GROUP BY source),
-      r AS (SELECT source, n,
-          n * sxy - sx * sy AS num, n * sxx - sx * sx AS den, sy
-        FROM m)
-      SELECT source, CAST(n AS BIGINT) AS n_docs,
-        CAST((2 * sy * 100 + n) // (2 * n) AS DOUBLE) / 1e6 AS mean_quality,
-        CAST((CASE WHEN num < 0 THEN -1 ELSE 1 END)
-          * ((2 * abs(num * 100) + den) // (2 * den)) AS DOUBLE) / 1e3
-          AS trend_per_1k,
-        ((CASE WHEN num < 0 THEN -1 ELSE 1 END)
-          * ((2 * abs(num * 100) + den) // (2 * den))) < -10 AS degrading
-      FROM r ORDER BY source""",
-    "x78_gopher_rules" -> """
-      WITH t AS (SELECT doc_id,
-          regexp_split_to_array(trim(text), '\s+') AS toks FROM documents),
-      c AS (SELECT doc_id,
-          CAST(len(toks) AS BIGINT) AS n_words,
-          CAST(GREATEST(len(toks), 1) AS BIGINT) AS nw,
-          CAST(COALESCE(list_sum(list_transform(toks, t -> length(t))), 0)
-            AS BIGINT) AS nch,
-          CAST(len(list_filter(toks, t -> regexp_matches(t, '[A-Za-z]')))
-            AS BIGINT) AS na,
-          CAST(len(list_filter(toks, t -> regexp_matches(t, '[#…]')))
-            AS BIGINT) AS ns,
-          CAST(len(list_intersect(list_distinct(toks),
-            ['the', 'a', 'of', 'and'])) AS BIGINT) AS nst
-        FROM t)
-      SELECT doc_id, n_words,
-        CAST((2 * nch * 10000 + nw) // (2 * nw) AS DOUBLE) / 1e4
-          AS mean_word_len,
-        CAST((2 * na * 10000 + nw) // (2 * nw) AS DOUBLE) / 1e4
-          AS alpha_frac,
-        nst AS n_stop,
-        (n_words BETWEEN 50 AND 100000
-          AND nch >= nw * 3 AND nch <= nw * 10
-          AND na * 5 >= nw * 4
-          AND ns * 10 <= nw
-          AND nst >= 2) AS passes
-      FROM c ORDER BY doc_id""",
-    "x79_lang_margin" -> """
-      WITH t AS (SELECT doc_id,
-          regexp_split_to_array(trim(text), '\s+') AS toks,
-          regexp_split_to_array(trim(lower(text)), '\s+') AS tl
-        FROM documents),
-      c AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n,
-          CAST(len(list_filter(tl, x -> x IN ('the', 'a', 'and', 'of')))
-            AS BIGINT) AS c_en,
-          CAST(len(list_filter(tl, x -> x IN ('de', 'o', 'da', 'em')))
-            AS BIGINT) AS c_pt,
-          CAST(len(list_filter(tl, x -> x IN ('der', 'die', 'das', 'und')))
-            AS BIGINT) AS c_de
-        FROM t),
-      m AS (SELECT doc_id, GREATEST(n, 1) AS nw, c_en, c_pt, c_de,
-          GREATEST(c_en, c_pt, c_de) AS best,
-          c_en + c_pt + c_de - GREATEST(c_en, c_pt, c_de)
-            - LEAST(c_en, c_pt, c_de) AS second
-        FROM c)
-      SELECT doc_id,
-        CASE WHEN c_en = best AND c_en > 0 THEN 'en'
-             WHEN c_pt = best AND c_pt > 0 THEN 'pt'
-             WHEN c_de = best AND c_de > 0 THEN 'de'
-             ELSE 'und' END AS lang_detectada,
-        CAST((2 * (best - second) * 10000 + nw) // (2 * nw) AS DOUBLE) / 1e4
-          AS margin,
-        (best = second OR best = 0) AS ambiguous
-      FROM m ORDER BY doc_id""",
-    "x77_soft_dedup_weights" -> s"""
-      $dedupClusterCtes,
-      fam AS (SELECT canonico, COUNT(*) AS peso FROM labels
-        GROUP BY canonico)
-      SELECT l.doc_id, CAST(s.peso AS BIGINT) AS peso,
-        CAST(ROUND(LN(CAST(s.peso AS DOUBLE) + 1) * 1e6, 0) AS DOUBLE) / 1e6
-          AS log_peso
-      FROM labels l JOIN fam s ON l.canonico = s.canonico
-      WHERE l.doc_id = l.canonico
-      ORDER BY l.doc_id""",
-    "x76_vocab_sketch" -> """
-      SELECT source,
-        CAST(COUNT(*) AS BIGINT) AS n_tok,
-        CAST(COUNT(DISTINCT w) AS BIGINT) AS n_types,
-        TRUE AS within_bound
-      FROM (SELECT source,
-          unnest(regexp_split_to_array(trim(text), '\s+')) AS w
-        FROM documents)
-      GROUP BY source ORDER BY source""",
-    "x74_sq8_recall" -> s"""
-      WITH qv AS (SELECT vec_id, embedding,
-          list_transform(embedding,
-            x -> CAST(ROUND(CAST(x AS DOUBLE) * 127 / mx, 0) AS BIGINT)) AS q
-        FROM (SELECT vec_id, embedding,
-            list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE))))
-              AS mx
-          FROM embeddings)
-        WHERE mx > 0),
-      qn AS (SELECT vec_id, embedding, q,
-          list_sum(list_transform(q, x -> x * x)) AS qn FROM qv),
-      sc AS (SELECT qq.vec_id AS qid, nn.vec_id AS nid,
-          ROUND(${cosSql("qq.embedding", "nn.embedding")}, 4) AS score_f,
-          CAST(list_sum(list_transform(list_zip(qq.q, nn.q),
-              p -> p[1] * p[2])) AS DOUBLE)
-            / (sqrt(CAST(qq.qn AS DOUBLE)) * sqrt(CAST(nn.qn AS DOUBLE)))
-            AS score_q
-        FROM qn qq JOIN qn nn
-          ON qq.vec_id < 5 AND nn.vec_id <> qq.vec_id),
-      rk AS (SELECT qid,
-          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score_f DESC, nid)
-            AS rf,
-          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score_q DESC, nid)
-            AS rq
-        FROM sc)
-      SELECT qid,
-        CAST(SUM(CASE WHEN rf <= 10 AND rq <= 10 THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_match,
-        CAST(SUM(CASE WHEN rf <= 10 AND rq <= 10 THEN 1 ELSE 0 END)
-          AS DOUBLE) / 10 AS recall_at_10
-      FROM rk GROUP BY qid ORDER BY qid""",
-    "x75_ivf_balance" -> s"""
-      WITH $ivfAssignedCtes,
-      counts AS (SELECT cell, COUNT(*) AS n_vecs FROM assigned
-        GROUP BY cell),
-      tot AS (SELECT SUM(n_vecs) AS total, MAX(n_vecs) AS mx,
-          COUNT(*) AS nc FROM counts)
-      SELECT cell, CAST(n_vecs AS BIGINT) AS n_vecs,
-        CAST((2 * n_vecs * 10000 + total) // (2 * total) AS DOUBLE) / 1e4
-          AS share,
-        CAST((2 * mx * nc * 10000 + total) // (2 * total) AS DOUBLE) / 1e4
-          AS imbalance
-      FROM counts CROSS JOIN tot ORDER BY cell""",
-    "x73_dup_graph_stats" -> s"""
-      WITH RECURSIVE corpus AS (
-        SELECT doc_id, text FROM $corpusSql WHERE doc_id % 1000000 < 200
-        UNION ALL
-        SELECT doc_id + 3000000,
-          array_to_string(list_slice(toks, 1, (3 * len(toks)) // 5), ' ')
-        FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-              FROM documents WHERE doc_id % 1000000 < 200)),
-      sh AS (
-        SELECT doc_id, unnest($sqlShingles3) AS sh
-        FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-              FROM corpus)),
-      sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-      inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2),
-      p AS (
-        SELECT id_a, id_b
-        FROM inter
-        JOIN (SELECT doc_id AS id_a, n AS na FROM sizes) USING (id_a)
-        JOIN (SELECT doc_id AS id_b, n AS nb FROM sizes) USING (id_b)
-        WHERE ROUND(CAST(inter AS DOUBLE) / (na + nb - inter), 4) >= 0.5),
-      edges2 AS (
-        SELECT id_a AS a, id_b AS b FROM p
-        UNION ALL SELECT id_b, id_a FROM p),
-      reach(a, b) AS (
-        SELECT a, b FROM edges2
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN edges2 e ON r.b = e.a),
-      labels AS (
-        SELECT c.doc_id,
-          LEAST(c.doc_id, COALESCE(m.mn, c.doc_id)) AS canonico
-        FROM corpus c
-        LEFT JOIN (SELECT a, MIN(b) AS mn FROM reach GROUP BY a) m
-          ON c.doc_id = m.a),
-      deg AS (SELECT doc_id, COUNT(*) AS k FROM (
-          SELECT id_a AS doc_id FROM p
-          UNION ALL SELECT id_b FROM p) GROUP BY doc_id),
-      dh AS (SELECT 'degree' AS stat, k, COUNT(*) AS n FROM deg GROUP BY k),
-      cs AS (SELECT canonico, COUNT(*) AS sz FROM labels GROUP BY canonico),
-      ch AS (SELECT 'component' AS stat, sz AS k, COUNT(*) AS n
-        FROM cs WHERE sz >= 2 GROUP BY sz)
-      SELECT stat, CAST(k AS BIGINT) AS k, CAST(n AS BIGINT) AS n
-      FROM (SELECT * FROM dh UNION ALL SELECT * FROM ch)
-      ORDER BY stat, k""",
-    "x71_split_leakage" -> s"""
-      WITH corpus AS (
-        SELECT doc_id, text FROM $corpusSql WHERE doc_id % 1000000 < 200),
-      splits AS (SELECT doc_id,
-          CASE WHEN b < 90 THEN 'train' WHEN b < 95 THEN 'val'
-            ELSE 'test' END AS split
-        FROM (SELECT doc_id,
-            ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
-              % 100 AS b
-          FROM corpus)),
-      sh AS (
-        SELECT doc_id, unnest($sqlShingles3) AS sh
-        FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-              FROM corpus)),
-      sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-      inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2),
-      p AS (
-        SELECT id_a, id_b
-        FROM inter
-        JOIN (SELECT doc_id AS id_a, n AS na FROM sizes) USING (id_a)
-        JOIN (SELECT doc_id AS id_b, n AS nb FROM sizes) USING (id_b)
-        WHERE ROUND(CAST(inter AS DOUBLE) / (na + nb - inter), 4) >= 0.5),
-      cross_p AS (
-        SELECT p.id_a, p.id_b, sa.split AS split_a, sb.split AS split_b
-        FROM p
-        JOIN splits sa ON p.id_a = sa.doc_id
-        JOIN splits sb ON p.id_b = sb.doc_id
-        WHERE sa.split <> sb.split),
-      leaked AS (SELECT split, COUNT(*) AS n_leaked FROM (
-          SELECT DISTINCT doc_id, split FROM (
-            SELECT id_a AS doc_id, split_a AS split FROM cross_p
-            UNION ALL SELECT id_b, split_b FROM cross_p))
-        GROUP BY split),
-      tot AS (SELECT split, COUNT(*) AS n_docs FROM splits GROUP BY split)
-      SELECT t.split, CAST(t.n_docs AS BIGINT) AS n_docs,
-        CAST(COALESCE(l.n_leaked, 0) AS BIGINT) AS n_leaked,
-        CAST((2 * COALESCE(l.n_leaked, 0) * 10000 + t.n_docs)
-          // (2 * t.n_docs) AS DOUBLE) / 1e4 AS leak_frac
-      FROM tot t LEFT JOIN leaked l USING (split)
-      ORDER BY t.split""",
-    "x72_edit_verify" -> s"""
-      WITH corpus AS (
-        SELECT doc_id, text FROM $corpusSql WHERE doc_id % 1000000 < 200),
-      sh AS (
-        SELECT doc_id, unnest($sqlShingles3) AS sh
-        FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-              FROM corpus)),
-      sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-      inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2),
-      p AS (
-        SELECT id_a, id_b,
-          ROUND(CAST(inter AS DOUBLE) / (na + nb - inter), 4) AS jaccard
-        FROM inter
-        JOIN (SELECT doc_id AS id_a, n AS na FROM sizes) USING (id_a)
-        JOIN (SELECT doc_id AS id_b, n AS nb FROM sizes) USING (id_b)
-        WHERE ROUND(CAST(inter AS DOUBLE) / (na + nb - inter), 4) >= 0.3),
-      v AS (
-        SELECT p.id_a, p.id_b, p.jaccard,
-          CAST(levenshtein(ca.text, cb.text) AS BIGINT) AS lev,
-          CAST(GREATEST(length(ca.text), length(cb.text)) AS BIGINT)
-            AS max_len
-        FROM p
-        JOIN corpus ca ON p.id_a = ca.doc_id
-        JOIN corpus cb ON p.id_b = cb.doc_id)
-      SELECT id_a, id_b, jaccard, lev, max_len,
-        CAST((2 * lev * 10000 + max_len) // (2 * max_len) AS DOUBLE) / 1e4
-          AS rel_edit,
-        (CAST((2 * lev * 10000 + max_len) // (2 * max_len) AS DOUBLE) / 1e4)
-          <= 0.2 AS confirmed
-      FROM v ORDER BY id_a, id_b""",
-    "x66_boilerplate_segments" -> """
-      WITH t AS (SELECT doc_id,
-          regexp_split_to_array(trim('portal ' || source
-            || ' official mirror terms of service apply'
-            || ' all rights reserved contact webmaster ' || text),
-            '\s+') AS toks
-        FROM documents),
-      b AS (SELECT doc_id, toks,
-          unnest(range(0, (len(toks) + 7) // 8)) AS g FROM t),
-      seg AS (SELECT doc_id,
-          md5(array_to_string(list_slice(toks, g * 8 + 1, g * 8 + 8), ' '))
-            AS fp
-        FROM b),
-      df AS (SELECT fp, COUNT(DISTINCT doc_id) AS df FROM seg GROUP BY fp),
-      agg AS (SELECT doc_id, COUNT(*) AS n_seg,
-          SUM(CASE WHEN df >= 3 THEN 1 ELSE 0 END) AS n_boiler
-        FROM seg JOIN df USING (fp) GROUP BY doc_id)
-      SELECT doc_id, CAST(n_seg AS BIGINT) AS n_seg,
-        CAST(n_boiler AS BIGINT) AS n_boiler,
-        CAST((2 * n_boiler * 10000 + n_seg) // (2 * n_seg) AS DOUBLE) / 1e4
-          AS boiler_frac
-      FROM agg ORDER BY doc_id""",
-    "x156_repeat_value" -> """
-      WITH u AS (SELECT source,
-          CAST(SUM(len(regexp_split_to_array(trim(text), '\s+')))
-            AS BIGINT) AS u_tok
-        FROM documents GROUP BY source),
-      grid AS (SELECT CAST(unnest([0, 1, 2, 4, 8, 16, 32]) AS BIGINT)
-          AS epochs),
-      eff AS (SELECT source, epochs, u_tok,
-          CAST(ROUND(CAST(u_tok AS DOUBLE)
-            * (1.0 + 15.39 * (1.0
-              - EXP(-CAST(epochs AS DOUBLE) / 15.39))), 0) AS BIGINT)
-            AS d_eff
-        FROM u, grid)
-      SELECT source, epochs, u_tok, d_eff,
-        CAST(((2 * d_eff * 10000 + u_tok * (1 + epochs))
-          // (2 * (u_tok * (1 + epochs)))) AS DOUBLE) / 1e4 AS efficiency
-      FROM eff ORDER BY source, epochs""",
-    "x155_sgt_smoothing" -> """
-      WITH cnt AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c
-        FROM (SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS w
-              FROM documents)
-        GROUP BY w),
-      fof AS MATERIALIZED (
-        SELECT c AS r, CAST(COUNT(*) AS BIGINT) AS n_r
-        FROM cnt GROUP BY c),
-      tot AS (SELECT CAST(SUM(r * n_r) AS BIGINT) AS n,
-          CAST(COALESCE(SUM(CASE WHEN r = 1 THEN n_r END), 0) AS BIGINT)
-            AS n1
-        FROM fof),
-      zt AS (SELECT r, n_r,
-          COALESCE(LAG(r) OVER (ORDER BY r), 0) AS q,
-          COALESCE(LEAD(r) OVER (ORDER BY r),
-            2 * r - COALESCE(LAG(r) OVER (ORDER BY r), 0)) AS t
-        FROM fof),
-      pts AS (SELECT
-          CAST(ROUND(LN(CAST(r AS DOUBLE)) * 1e6, 0) AS BIGINT) AS lx,
-          CAST(ROUND(LN(2 * CAST(n_r AS DOUBLE) / CAST(t - q AS DOUBLE))
-            * 1e6, 0) AS BIGINT) AS ly
-        FROM zt),
-      sums AS (SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-          CAST(SUM(lx) AS HUGEINT) AS sx, CAST(SUM(ly) AS HUGEINT) AS sy,
-          CAST(SUM(CAST(lx AS HUGEINT) * ly) AS HUGEINT) AS sxy,
-          CAST(SUM(CAST(lx AS HUGEINT) * lx) AS HUGEINT) AS sxx
-        FROM pts),
-      ft AS (SELECT
-          (CASE WHEN n * sxy - sx * sy < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(n * sxy - sx * sy) * 1000000
-              + (n * sxx - sx * sx)) // (2 * (n * sxx - sx * sx)))
-            AS slope_q
-        FROM sums),
-      est AS (SELECT z.r, z.n_r,
-          CASE WHEN nx.nn IS NOT NULL THEN
-            (2 * (z.r + 1) * nx.nn * 10000 + z.n_r) // (2 * z.n_r)
-          END AS t4,
-          CAST(ROUND(CAST(z.r AS DOUBLE)
-            * EXP((CAST(f.slope_q AS DOUBLE) / 1e6 + 1)
-              * LN(1 + 1 / CAST(z.r AS DOUBLE))) * 1e4, 0) AS BIGINT)
-            AS l4,
-          CASE WHEN nx.nn IS NOT NULL THEN
-            CAST(ROUND(1.65 * SQRT(CAST((z.r + 1) * (z.r + 1) AS DOUBLE)
-              * (CAST(nx.nn AS DOUBLE) / (CAST(z.n_r AS DOUBLE) * z.n_r))
-              * (1 + CAST(nx.nn AS DOUBLE) / z.n_r)) * 1e4, 0) AS BIGINT)
-          ELSE CAST(0 AS BIGINT) END AS thr4
-        FROM fof z
-        LEFT JOIN (SELECT r - 1 AS r, n_r AS nn FROM fof) nx USING (r),
-        ft f),
-      sw AS (SELECT COALESCE(MIN(r), 9223372036854775807) AS sr
-        FROM est WHERE t4 IS NULL OR abs(t4 - l4) <= thr4),
-      fin AS (SELECT r, n_r, t4, l4,
-          CASE WHEN r < sw.sr THEN t4 ELSE l4 END AS e4
-        FROM est, sw),
-      ssum AS (SELECT CAST(SUM(CAST(n_r AS HUGEINT) * e4) AS HUGEINT)
-          AS s
-        FROM fin)
-      SELECT f.r, f.n_r, CAST(f.t4 AS DOUBLE) / 1e4 AS r_turing,
-        CAST(f.l4 AS DOUBLE) / 1e4 AS r_lgt,
-        CAST(f.e4 AS DOUBLE) / 1e4 AS r_sgt,
-        CAST((2 * (CAST(t.n - t.n1 AS HUGEINT) * f.e4 * 100000000)
-            + CAST(t.n AS HUGEINT) * s.s)
-          // (2 * CAST(t.n AS HUGEINT) * s.s) AS DOUBLE) / 1e8 AS p_sgt,
-        f.r >= sw.sr AS lgt_used
-      FROM fin f, tot t, ssum s, sw ORDER BY f.r""",
-    "x153_heaps_fit" -> """
-      WITH mx AS (SELECT MAX(doc_id) // 10 + 1 AS width FROM documents),
-      tok AS (SELECT doc_id,
-          unnest(regexp_split_to_array(trim(text), '\s+')) AS w
-        FROM documents),
-      arrivals AS (SELECT doc_id // (SELECT width FROM mx) AS bucket,
-          COUNT(*) AS n_tok FROM tok GROUP BY 1),
-      firsts AS (SELECT w, MIN(doc_id) AS first_doc FROM tok GROUP BY w),
-      fresh AS (SELECT first_doc // (SELECT width FROM mx) AS bucket,
-          COUNT(*) AS n_new_types FROM firsts GROUP BY 1),
-      curve AS (SELECT
-          CAST(SUM(a.n_tok) OVER (ORDER BY a.bucket) AS BIGINT) AS cum_tok,
-          CAST(SUM(COALESCE(f.n_new_types, 0)) OVER (ORDER BY a.bucket)
-            AS BIGINT) AS cum_types
-        FROM arrivals a LEFT JOIN fresh f USING (bucket)),
-      pts AS (SELECT
-          CAST(ROUND(LN(CAST(cum_tok AS DOUBLE)) * 1e6, 0) AS BIGINT)
-            AS lx,
-          CAST(ROUND(LN(CAST(cum_types AS DOUBLE)) * 1e6, 0) AS BIGINT)
-            AS ly
-        FROM curve),
-      sums AS (SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-          CAST(SUM(lx) AS HUGEINT) AS sx, CAST(SUM(ly) AS HUGEINT) AS sy,
-          CAST(SUM(CAST(lx AS HUGEINT) * ly) AS HUGEINT) AS sxy,
-          CAST(SUM(CAST(lx AS HUGEINT) * lx) AS HUGEINT) AS sxx
-        FROM pts),
-      ft AS (SELECT n, sx, sy,
-          (CASE WHEN n * sxy - sx * sy < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(n * sxy - sx * sy) * 1000000
-              + (n * sxx - sx * sx)) // (2 * (n * sxx - sx * sx)))
-            AS slope_q
-        FROM sums),
-      ft2 AS (SELECT n, slope_q,
-          (CASE WHEN sy * 1000000 - slope_q * sx < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(sy * 1000000 - slope_q * sx) + n * 1000000)
-              // (2 * n * 1000000)) AS a_q
-        FROM ft),
-      pr AS (SELECT CAST(ROUND(LN(CAST(10 * MAX(cum_tok) AS DOUBLE))
-          * 1e6, 0) AS HUGEINT) AS lx10 FROM curve)
-      SELECT CAST(n AS BIGINT) AS n_points,
-        CAST(slope_q AS DOUBLE) / 1e6 AS beta,
-        CAST(a_q AS DOUBLE) / 1e6 AS ln_k,
-        ROUND(EXP(CAST(a_q + (CASE WHEN slope_q * lx10 < 0 THEN -1
-            ELSE 1 END) * ((2 * abs(slope_q * lx10) + 1000000)
-            // 2000000) AS DOUBLE) / 1e6), 2) AS v_pred_10x
-      FROM ft2, pr""",
-    "x154_zipf_fit" -> """
-      WITH cnt AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c
-        FROM (SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS w
-              FROM documents)
-        GROUP BY w),
-      top AS (SELECT c, rk FROM (
-          SELECT c, ROW_NUMBER() OVER (ORDER BY c DESC, w) AS rk
-          FROM cnt)
-        WHERE rk <= 30),
-      pts AS (SELECT
-          CAST(ROUND(LN(CAST(rk AS DOUBLE)) * 1e6, 0) AS BIGINT) AS lx,
-          CAST(ROUND(LN(CAST(c AS DOUBLE)) * 1e6, 0) AS BIGINT) AS ly
-        FROM top),
-      sums AS (SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-          CAST(SUM(lx) AS HUGEINT) AS sx, CAST(SUM(ly) AS HUGEINT) AS sy,
-          CAST(SUM(CAST(lx AS HUGEINT) * ly) AS HUGEINT) AS sxy,
-          CAST(SUM(CAST(lx AS HUGEINT) * lx) AS HUGEINT) AS sxx
-        FROM pts),
-      ft AS (SELECT n, sx, sy,
-          (CASE WHEN n * sxy - sx * sy < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(n * sxy - sx * sy) * 1000000
-              + (n * sxx - sx * sx)) // (2 * (n * sxx - sx * sx)))
-            AS slope_q
-        FROM sums),
-      ft2 AS (SELECT n, slope_q,
-          (CASE WHEN sy * 1000000 - slope_q * sx < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(sy * 1000000 - slope_q * sx) + n * 1000000)
-              // (2 * n * 1000000)) AS a_q
-        FROM ft),
-      res AS (SELECT p.ly,
-          f.a_q + (CASE WHEN f.slope_q * p.lx < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(f.slope_q * p.lx) + 1000000) // 2000000) AS pred
-        FROM pts p, ft2 f),
-      yb AS (SELECT (CASE WHEN sy < 0 THEN -1 ELSE 1 END)
-          * ((2 * abs(sy) + n) // (2 * n)) AS ybar FROM sums),
-      ss AS (SELECT
-          CAST(SUM((CAST(ly AS HUGEINT) - yb.ybar)
-            * (CAST(ly AS HUGEINT) - yb.ybar)) AS HUGEINT) AS sstot,
-          CAST(SUM((CAST(ly AS HUGEINT) - pred)
-            * (CAST(ly AS HUGEINT) - pred)) AS HUGEINT) AS ssres
-        FROM res, yb GROUP BY ALL)
-      SELECT CAST(f.n AS BIGINT) AS n_points,
-        CAST(f.slope_q AS DOUBLE) / 1e6 AS slope,
-        CAST(f.a_q AS DOUBLE) / 1e6 AS intercept,
-        CASE WHEN ss.sstot > 0 THEN
-          CAST((CASE WHEN ss.sstot - ss.ssres < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs((ss.sstot - ss.ssres) * 1000000) + ss.sstot)
-              // (2 * ss.sstot)) AS DOUBLE) / 1e6 END AS r2
-      FROM ft2 f, ss""",
-    "x67_vocab_growth" -> """
-      WITH mx AS (SELECT MAX(doc_id) // 10 + 1 AS width FROM documents),
-      tok AS (SELECT doc_id,
-          unnest(regexp_split_to_array(trim(text), '\s+')) AS w
-        FROM documents),
-      arrivals AS (SELECT doc_id // (SELECT width FROM mx) AS bucket,
-          COUNT(*) AS n_tok FROM tok GROUP BY 1),
-      firsts AS (SELECT w, MIN(doc_id) AS first_doc FROM tok GROUP BY w),
-      fresh AS (SELECT first_doc // (SELECT width FROM mx) AS bucket,
-          COUNT(*) AS n_new_types FROM firsts GROUP BY 1)
-      SELECT a.bucket, CAST(a.n_tok AS BIGINT) AS n_tok,
-        CAST(COALESCE(f.n_new_types, 0) AS BIGINT) AS n_new_types,
-        CAST(SUM(a.n_tok) OVER (ORDER BY a.bucket) AS BIGINT) AS cum_tok,
-        CAST(SUM(COALESCE(f.n_new_types, 0)) OVER (ORDER BY a.bucket)
-          AS BIGINT) AS cum_types
-      FROM arrivals a LEFT JOIN fresh f USING (bucket)
-      ORDER BY bucket""",
-    "x68_quality_psi" -> """
-      WITH sp AS (SELECT (MAX(doc_id) + 1) // 2 AS split FROM documents),
-      qual AS (SELECT doc_id,
-          ROUND(LEAST(len(toks) / 50.0, 1.0) * 0.4
-            + (1.0 - LEAST((CAST(length(text) - length(regexp_replace(text,
-                  '[^A-Za-z0-9\s]', '', 'g')) AS DOUBLE)
-                / GREATEST(length(text), 1)) * 5.0, 1.0)) * 0.3
-            + LEAST((CAST(len(list_filter(toks,
-                  t -> t IN ('the','a','of','and'))) AS DOUBLE)
-                / GREATEST(len(toks), 1)) * 10.0, 1.0) * 0.3, 4) AS quality
-        FROM (SELECT doc_id, text,
-                regexp_split_to_array(trim(text), '\s+') AS toks
-              FROM documents)),
-      binned AS (SELECT
-          LEAST(CAST(ROUND(quality * 1e4, 0) AS BIGINT) // 1000, 9) AS bin,
-          CASE WHEN doc_id < (SELECT split FROM sp) THEN 1 ELSE 0 END AS early
-        FROM qual),
-      counts AS (SELECT bin, SUM(early) AS c_early,
-          SUM(1 - early) AS c_late FROM binned GROUP BY bin),
-      tot AS (SELECT SUM(early) AS n_early,
-          SUM(1 - early) AS n_late FROM binned),
-      grid AS (SELECT g.bin, COALESCE(c.c_early, 0) AS c_early,
-          COALESCE(c.c_late, 0) AS c_late, t.n_early, t.n_late
-        FROM (SELECT unnest(range(0, 10)) AS bin) g
-        LEFT JOIN counts c USING (bin) CROSS JOIN tot t),
-      contrib AS (SELECT bin, c_early, c_late,
-          CAST(ROUND((((c_early + 1) / CAST(n_early + 10 AS DOUBLE))
-              - ((c_late + 1) / CAST(n_late + 10 AS DOUBLE)))
-            * CAST(CAST(ROUND(LN(CAST((c_early + 1) * (n_late + 10) AS DOUBLE)
-                / CAST((c_late + 1) * (n_early + 10) AS DOUBLE)) * 1e6, 0)
-              AS BIGINT) AS DOUBLE) * 1e2, 0) AS BIGINT) AS contrib_q
-        FROM grid)
-      SELECT bin, CAST(c_early AS BIGINT) AS c_early,
-        CAST(c_late AS BIGINT) AS c_late,
-        CAST(contrib_q AS DOUBLE) / 1e8 AS contrib,
-        CAST(SUM(contrib_q) OVER () AS DOUBLE) / 1e8 AS psi
-      FROM contrib ORDER BY bin""",
-    "x69_prototypicality" -> """
-      WITH q AS (SELECT vec_id, label,
-          unnest(range(1, len(embedding) + 1)) AS i,
-          unnest(embedding) AS x
-        FROM embeddings),
-      qq AS (SELECT vec_id, label, i,
-          CAST(ROUND(CAST(x AS DOUBLE) * 1e6, 0) AS BIGINT) AS qi FROM q),
-      cent AS (SELECT label, i, SUM(qi) AS s_li FROM qq GROUP BY label, i),
-      cn AS (SELECT label,
-          CAST(SUM(CAST(s_li AS HUGEINT) * s_li) AS DOUBLE) AS n2
-        FROM cent GROUP BY label),
-      pv AS (SELECT vec_id, qq.label,
-          CAST(SUM(CAST(qi AS HUGEINT) * s_li) AS DOUBLE) AS num,
-          CAST(SUM(CAST(qi AS HUGEINT) * qi) AS DOUBLE) AS qn2
-        FROM qq JOIN cent ON qq.label = cent.label AND qq.i = cent.i
-        GROUP BY vec_id, qq.label),
-      sc AS (SELECT vec_id, pv.label,
-          num / (sqrt(qn2) * sqrt(n2)) AS cosc
-        FROM pv JOIN cn ON pv.label = cn.label)
-      SELECT vec_id, label, ROUND(cosc, 6) AS cos_centroid,
-        CAST(ROW_NUMBER() OVER (PARTITION BY label
-          ORDER BY cosc DESC, vec_id) AS INT) AS rank_in_label
-      FROM sc ORDER BY label, rank_in_label""",
-    "x70_mixture_sample" -> s"""
-      WITH stats AS (SELECT source, COUNT(*) AS n_docs,
-          SUM(len(regexp_split_to_array(trim(text), '\\s+'))) AS tok
-        FROM documents GROUP BY source),
-      sq AS (SELECT source, n_docs, tok,
-          CAST(ROUND(sqrt(CAST(tok AS DOUBLE)) * 1e6, 0) AS BIGINT) AS sqq
-        FROM stats),
-      tot AS (SELECT SUM(sqq) AS denomq, SUM(tok) AS budget FROM sq),
-      rates AS (SELECT source, n_docs, tok,
-          LEAST(CAST(budget AS DOUBLE)
-            * (CAST(sqq AS DOUBLE) / CAST(denomq AS DOUBLE))
-            / CAST(tok AS DOUBLE), 1.0) AS rate
-        FROM sq CROSS JOIN tot),
-      sel AS (SELECT d.source,
-          len(regexp_split_to_array(trim(d.text), '\\s+')) AS n_tok,
-          (CAST(${md5Hash32Sql("CAST(d.doc_id AS VARCHAR)")} AS DOUBLE)
-            / 4294967296.0) < r.rate AS s
-        FROM documents d JOIN rates r ON d.source = r.source)
-      SELECT r.source, CAST(r.n_docs AS BIGINT) AS n_docs,
-        CAST(r.tok AS BIGINT) AS tok, ROUND(r.rate, 6) AS rate,
-        CAST(SUM(CASE WHEN s.s THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-        CAST(SUM(CASE WHEN s.s THEN s.n_tok ELSE 0 END) AS BIGINT) AS tok_kept
-      FROM rates r JOIN sel s ON r.source = s.source
-      GROUP BY r.source, r.n_docs, r.tok, r.rate
-      ORDER BY r.source""",
-    "x83_kn_logppl" -> s"""$knScoredCtes
-      SELECT doc_id, n_steps,
-        CAST((CASE WHEN s_lp < 0 THEN -1 ELSE 1 END)
-          * ((2 * abs(s_lp) + n_steps) // (2 * n_steps)) AS DOUBLE) / 1e4
-          AS ppl3_kn
-      FROM agg ORDER BY doc_id""",
-    "x113_ppl_buckets" -> s"""$knScoredCtes,
-      ppl AS (SELECT a.doc_id, d.lang,
-          CAST((CASE WHEN a.s_lp < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(a.s_lp) + a.n_steps) // (2 * a.n_steps)) AS DOUBLE)
-            / 1e4 AS ppl3_kn
-        FROM agg a JOIN documents d USING (doc_id)),
-      hist AS (SELECT lang, ppl3_kn, COUNT(*) AS c FROM ppl GROUP BY 1, 2),
-      cum AS (SELECT lang, ppl3_kn,
-          SUM(c) OVER (PARTITION BY lang ORDER BY ppl3_kn) AS cum,
-          SUM(c) OVER (PARTITION BY lang) AS n
-        FROM hist),
-      cuts AS (SELECT lang,
-          MIN(CASE WHEN cum * 3 >= n THEN ppl3_kn END) AS c1,
-          MIN(CASE WHEN cum * 3 >= n * 2 THEN ppl3_kn END) AS c2
-        FROM cum GROUP BY lang)
-      SELECT p.doc_id, p.lang, p.ppl3_kn,
-        CASE WHEN p.ppl3_kn <= c.c1 THEN 'head'
-          WHEN p.ppl3_kn <= c.c2 THEN 'middle'
-          ELSE 'tail' END AS bucket
-      FROM ppl p JOIN cuts c USING (lang) ORDER BY p.doc_id""",
-    "x64_backoff_logppl" -> """
-      WITH tk AS (SELECT doc_id,
-          regexp_split_to_array(trim(text), '\s+') AS toks FROM documents),
-      ttk AS (SELECT regexp_split_to_array(trim(text), '\s+') AS toks
-        FROM documents WHERE lang = 'en'),
-      uni AS (SELECT w, COUNT(*) AS c1
-        FROM (SELECT unnest(toks) AS w FROM ttk) GROUP BY w),
-      tot AS (SELECT CAST(SUM(c1) AS BIGINT) AS nt,
-        CAST(COUNT(*) AS BIGINT) AS v FROM uni),
-      big AS (SELECT g, COUNT(*) AS c2
-        FROM (SELECT unnest(list_transform(
-            range(1, greatest(len(toks) - 1, 0) + 1),
-            i -> toks[i] || ' ' || toks[i+1])) AS g FROM ttk) GROUP BY g),
-      tri AS (SELECT g, COUNT(*) AS c3
-        FROM (SELECT unnest(list_transform(
-            range(1, greatest(len(toks) - 2, 0) + 1),
-            i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS g
-          FROM ttk) GROUP BY g),
-      steps AS (SELECT doc_id, toks, unnest(range(3, len(toks) + 1)) AS i
-        FROM tk WHERE len(toks) >= 3),
-      flat AS (SELECT doc_id,
-          toks[i-2] || ' ' || toks[i-1] || ' ' || toks[i] AS g3,
-          toks[i-2] || ' ' || toks[i-1] AS g2ctx,
-          toks[i-1] || ' ' || toks[i] AS g2,
-          toks[i-1] AS wctx, toks[i] AS w
-        FROM steps),
-      sc AS (SELECT doc_id,
-          CAST(ROUND(-LN(
-            CASE WHEN t.c3 IS NOT NULL
-                THEN CAST(t.c3 AS DOUBLE) / b1.c2
-              WHEN b2.c2 IS NOT NULL
-                THEN CAST(b2.c2 * 2 AS DOUBLE) / (u1.c1 * 5)
-              ELSE CAST((COALESCE(u2.c1, 0) + 1) * 4 AS DOUBLE)
-                / ((tot.nt + tot.v) * 25) END) * 1e4, 0) AS BIGINT) AS lp_q
-        FROM flat
-        LEFT JOIN tri t ON t.g = flat.g3
-        LEFT JOIN big b1 ON b1.g = flat.g2ctx
-        LEFT JOIN big b2 ON b2.g = flat.g2
-        LEFT JOIN uni u1 ON u1.w = flat.wctx
-        LEFT JOIN uni u2 ON u2.w = flat.w
-        CROSS JOIN tot),
-      agg AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_steps,
-          CAST(SUM(lp_q) AS BIGINT) AS s_lp
-        FROM sc GROUP BY doc_id)
-      SELECT doc_id, n_steps,
-        CAST((CASE WHEN s_lp < 0 THEN -1 ELSE 1 END)
-          * ((2 * abs(s_lp) + n_steps) // (2 * n_steps)) AS DOUBLE) / 1e4
-          AS ppl3_proxy
-      FROM agg ORDER BY doc_id""",
-    "x63_pmi_cooccurrence" -> """
-      WITH toks AS (SELECT doc_id,
-          regexp_split_to_array(trim(text), '\s+') AS toks,
-          len(regexp_split_to_array(trim(text), '\s+')) AS n
-        FROM documents),
-      pos AS (SELECT toks, n, unnest(range(1, n + 1)) AS i FROM toks),
-      pk AS (SELECT toks, n, i, unnest(range(1, 5)) AS k FROM pos),
-      pairs AS (
-        SELECT LEAST(toks[i], toks[i + k]) AS w1,
-          GREATEST(toks[i], toks[i + k]) AS w2
-        FROM pk WHERE i + k <= n),
-      pc AS (SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c_pair
-        FROM pairs GROUP BY w1, w2),
-      uni AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c_w
-        FROM (SELECT unnest(toks) AS w FROM toks) GROUP BY w),
-      np AS (SELECT CAST(SUM(c_pair) AS BIGINT) AS n_pairs FROM pc),
-      mt AS (SELECT CAST(SUM(c_w) AS BIGINT) AS m_toks FROM uni)
-      SELECT w1, w2, c_pair,
-        CAST(CAST(ROUND(LN(
-          (CAST(c_pair AS DOUBLE) / CAST(n_pairs AS DOUBLE))
-          / ((CAST(u1.c_w AS DOUBLE) / CAST(m_toks AS DOUBLE))
-            * (CAST(u2.c_w AS DOUBLE) / CAST(m_toks AS DOUBLE)))) * 1e4, 0)
-          AS BIGINT) AS DOUBLE) / 1e4 AS pmi
-      FROM pc
-      JOIN uni u1 ON u1.w = pc.w1
-      JOIN uni u2 ON u2.w = pc.w2
-      CROSS JOIN np CROSS JOIN mt
-      WHERE c_pair >= 5
-      ORDER BY pmi DESC, w1, w2
-      LIMIT 100""",
-    "x60_signature_store" -> {
-      val params = graft.dedup.NearDup.minhashParams(16).zipWithIndex
-        .map { case ((a, b), j) => s"($j, ${a}::BIGINT, ${b}::BIGINT)" }
-        .mkString(", ")
-      s"""
-      WITH corpus AS (
-        SELECT doc_id, text FROM documents WHERE doc_id % 1000000 < 200
-        UNION ALL
-        SELECT doc_id + 1000000, text FROM documents
-        WHERE doc_id % 1000000 < 200
-        UNION ALL
-        SELECT doc_id + 2000000, text || ' extra' FROM documents
-        WHERE doc_id % 1000000 < 200),
-      docs AS (
-        SELECT doc_id, $sqlShingles3 AS shs
-        FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-              FROM corpus)),
-      sh AS (SELECT doc_id, unnest(shs) AS sh FROM docs),
-      hs AS (SELECT doc_id, ${md5Hash32Sql("sh")} AS h FROM sh),
-      minh AS (
-        SELECT doc_id, params.j,
-          MIN((h * params.a + params.b) % ${graft.dedup.NearDup.minhashPrime}) AS mh
-        FROM hs, (VALUES $params) AS params(j, a, b)
-        GROUP BY doc_id, params.j),
-      bands AS (
-        SELECT doc_id, j // 4 AS band,
-          string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j) AS key
-        FROM minh GROUP BY doc_id, j // 4),
-      cand AS (
-        SELECT DISTINCT n.doc_id AS new_id, o.doc_id AS old_id
-        FROM bands n JOIN bands o ON n.band = o.band AND n.key = o.key
-        WHERE n.doc_id >= 1000000 AND o.doc_id < 1000000),
-      sizes AS (SELECT doc_id, len(shs) AS n FROM docs),
-      inter AS (
-        SELECT a.doc_id AS new_id, b.doc_id AS old_id, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON a.sh = b.sh
-        WHERE a.doc_id >= 1000000 AND b.doc_id < 1000000
-        GROUP BY 1, 2)
-      SELECT c.new_id, c.old_id,
-        ROUND(CAST(i.inter AS DOUBLE) / (sa.n + sb.nb - i.inter), 4) AS jaccard
-      FROM cand c
-      JOIN inter i USING (new_id, old_id)
-      JOIN (SELECT doc_id AS new_id, n FROM sizes) sa USING (new_id)
-      JOIN (SELECT doc_id AS old_id, n AS nb FROM sizes) sb USING (old_id)
-      WHERE ROUND(CAST(i.inter AS DOUBLE) / (sa.n + sb.nb - i.inter), 4) >= 0.5
-      ORDER BY new_id, old_id"""
-    },
-    "x127_em_interpolation" -> {
-      val em = new StringBuilder
-      for (k <- 1 to 5) {
-        val den = "l0 * p0 + l1 * p1 + l2 * p2 + l3 * p3"
-        val sums = (0 to 3).map(o =>
-          s"""CAST(SUM(CAST(ROUND(l$o * p$o / ($den) * 1e6, 0)
-            AS BIGINT)) AS BIGINT) AS s$o""").mkString(",\n          ")
-        em ++= s""",
-      e$k AS MATERIALIZED (SELECT
-          $sums
-        FROM scored, lam${k - 1}),
-      lam$k AS (SELECT
-          CAST(s0 AS DOUBLE) / (CAST(t AS DOUBLE) * 1e6) AS l0,
-          CAST(s1 AS DOUBLE) / (CAST(t AS DOUBLE) * 1e6) AS l1,
-          CAST(s2 AS DOUBLE) / (CAST(t AS DOUBLE) * 1e6) AS l2,
-          CAST(s3 AS DOUBLE) / (CAST(t AS DOUBLE) * 1e6) AS l3
-        FROM e$k, tcount)"""
-      }
-      s"""WITH sp AS (SELECT doc_id, text,
-          ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % 100
-            AS b
-        FROM documents),
-      ttr AS MATERIALIZED (
-        SELECT regexp_split_to_array(trim(text), '\\s+') AS toks
-        FROM sp WHERE b < 90),
-      uni AS MATERIALIZED (SELECT w, CAST(COUNT(*) AS BIGINT) AS c1
-        FROM (SELECT unnest(toks) AS w FROM ttr) GROUP BY w),
-      scal AS (SELECT CAST(SUM(c1) AS BIGINT) AS nn,
-          CAST(COUNT(*) AS BIGINT) AS vv
-        FROM uni),
-      bi AS MATERIALIZED (
-        SELECT toks[CAST(i - 1 AS INT)] AS v, toks[CAST(i AS INT)] AS w,
-          CAST(COUNT(*) AS BIGINT) AS c2
-        FROM ttr, unnest(range(2, len(toks) + 1)) AS t(i)
-        GROUP BY 1, 2),
-      ctx2 AS MATERIALIZED (SELECT v, CAST(SUM(c2) AS BIGINT) AS k2
-        FROM bi GROUP BY v),
-      tri AS MATERIALIZED (
-        SELECT toks[CAST(i - 2 AS INT)] AS u, toks[CAST(i - 1 AS INT)] AS v,
-          toks[CAST(i AS INT)] AS w, CAST(COUNT(*) AS BIGINT) AS c3
-        FROM ttr, unnest(range(3, len(toks) + 1)) AS t(i)
-        GROUP BY 1, 2, 3),
-      ctx3 AS MATERIALIZED (SELECT u, v, CAST(SUM(c3) AS BIGINT) AS k3
-        FROM tri GROUP BY u, v),
-      ho AS MATERIALIZED (
-        SELECT toks[CAST(i - 2 AS INT)] AS u, toks[CAST(i - 1 AS INT)] AS v,
-          toks[CAST(i AS INT)] AS w
-        FROM (SELECT regexp_split_to_array(trim(text), '\\s+') AS toks
-            FROM sp WHERE b >= 90 AND b < 95),
-          unnest(range(3, len(toks) + 1)) AS t(i)),
-      scored AS MATERIALIZED (
-        SELECT 1.0 / (CAST(vv AS DOUBLE) + 1.0) AS p0,
-          CAST(COALESCE(c1, 0) AS DOUBLE) / CAST(nn AS DOUBLE) AS p1,
-          CASE WHEN k2 IS NULL THEN 0.0
-            ELSE CAST(COALESCE(c2, 0) AS DOUBLE) / CAST(k2 AS DOUBLE) END
-            AS p2,
-          CASE WHEN k3 IS NULL THEN 0.0
-            ELSE CAST(COALESCE(c3, 0) AS DOUBLE) / CAST(k3 AS DOUBLE) END
-            AS p3
-        FROM ho
-        LEFT JOIN uni USING (w)
-        LEFT JOIN bi USING (v, w)
-        LEFT JOIN ctx2 USING (v)
-        LEFT JOIN tri USING (u, v, w)
-        LEFT JOIN ctx3 USING (u, v)
-        CROSS JOIN scal),
-      tcount AS (SELECT CAST(COUNT(*) AS BIGINT) AS t FROM scored),
-      lam0 AS (SELECT CAST(0.25 AS DOUBLE) AS l0, CAST(0.25 AS DOUBLE) AS l1,
-        CAST(0.25 AS DOUBLE) AS l2, CAST(0.25 AS DOUBLE) AS l3)
-      $em
-      SELECT component, lambda FROM (
-        SELECT 'uniform' AS component, ROUND(l0, 6) AS lambda FROM lam5
-        UNION ALL SELECT 'unigram', ROUND(l1, 6) FROM lam5
-        UNION ALL SELECT 'bigram', ROUND(l2, 6) FROM lam5
-        UNION ALL SELECT 'trigram', ROUND(l3, 6) FROM lam5)
-      ORDER BY component"""
-    },
-    "x134_source_run_overlap" -> s"""
-      WITH ${winnowCtesSql("SELECT doc_id, text FROM documents")},
-      fs AS (
-        SELECT DISTINCT d.source, u.fp
-        FROM wf JOIN documents d USING (doc_id),
-          unnest(wf.fps) AS u(fp)),
-      tot AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS nf
-        FROM fs GROUP BY source),
-      pr AS (
-        SELECT a.source AS source_a, b.source AS source_b,
-          CAST(COUNT(*) AS BIGINT) AS shared
-        FROM fs a JOIN fs b ON a.fp = b.fp AND a.source < b.source
-        GROUP BY 1, 2)
-      SELECT pr.source_a, pr.source_b, pr.shared,
-        CAST(((2 * pr.shared * 10000 + LEAST(ta.nf, tb.nf))
-          // (2 * LEAST(ta.nf, tb.nf))) AS DOUBLE) / 1e4 AS overlap_coef
-      FROM pr
-      JOIN tot ta ON ta.source = pr.source_a
-      JOIN tot tb ON tb.source = pr.source_b
-      ORDER BY source_a, source_b""",
-    "x133_dsir_resample" -> s"""
-      WITH tok AS (
-        SELECT doc_id, lang,
-          unnest(regexp_split_to_array(trim(text), '\\s+')) AS token
-        FROM documents),
-      raw AS (SELECT token, COUNT(*) AS c_r FROM tok GROUP BY token),
-      tgt AS (SELECT token, COUNT(*) AS c_t FROM tok WHERE lang = 'en'
-        GROUP BY token),
-      tots AS (SELECT (SELECT SUM(c_r) FROM raw) AS n_r,
-                      (SELECT COUNT(*) FROM raw) AS v,
-                      (SELECT SUM(c_t) FROM tgt) AS n_t),
-      vocab AS (SELECT token,
-          CAST(ROUND(LN(CAST((COALESCE(c_t, 0) + 1) * (n_r + v) AS DOUBLE)
-              / ((c_r + 1) * (n_t + v))) * 1e4, 0) AS BIGINT) AS lp_q
-        FROM raw LEFT JOIN tgt USING (token) CROSS JOIN tots),
-      agg AS (SELECT doc_id,
-          CAST(COUNT(*) AS BIGINT) AS n_tok,
-          CAST(SUM(lp_q) AS BIGINT) AS s_lp
-        FROM tok JOIN vocab USING (token)
-        GROUP BY doc_id),
-      wq AS (SELECT doc_id,
-          CAST((CASE WHEN s_lp < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(s_lp) + n_tok) // (2 * n_tok)) AS BIGINT) AS wq
-        FROM agg),
-      mx AS (SELECT MAX(wq) AS mxw FROM wq),
-      p AS (SELECT w.doc_id, d.source, w.wq,
-          CAST(ROUND(exp(CAST(w.wq - mxw AS DOUBLE) / 1e4) * 1e6, 0)
-            AS BIGINT) AS pq,
-          (${md5Hash32Sql("CAST(w.doc_id AS VARCHAR)")}) AS h
-        FROM wq w JOIN documents d USING (doc_id), mx)
-      SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        CAST(SUM(CASE WHEN h * 1000000 < pq * 4294967296 THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_kept,
-        CAST(((2 * SUM(CASE WHEN h * 1000000 < pq * 4294967296
-            THEN 1 ELSE 0 END) * 10000 + COUNT(*)) // (2 * COUNT(*)))
-          AS DOUBLE) / 1e4 AS keep_rate,
-        CASE WHEN SUM(CASE WHEN h * 1000000 < pq * 4294967296
-            THEN 1 ELSE 0 END) > 0
-          THEN CAST((CASE WHEN SUM(CASE WHEN h * 1000000 < pq * 4294967296
-              THEN wq ELSE 0 END) < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(SUM(CASE WHEN h * 1000000 < pq * 4294967296
-                THEN wq ELSE 0 END))
-              + SUM(CASE WHEN h * 1000000 < pq * 4294967296
-                THEN 1 ELSE 0 END))
-              // (2 * SUM(CASE WHEN h * 1000000 < pq * 4294967296
-                THEN 1 ELSE 0 END))) AS DOUBLE) / 1e4
-          END AS mean_w_kept
-      FROM p GROUP BY source ORDER BY source""",
-    "x132_pagination_stitch" -> """
-      WITH base AS (SELECT doc_id, text,
-          regexp_split_to_array(trim(text), '\s+') AS toks
-        FROM documents),
-      pag AS (
-        SELECT doc_id, text FROM base
-        WHERE NOT (doc_id % 5 = 2 AND len(toks) >= 24)
-        UNION ALL
-        SELECT doc_id, array_to_string(list_slice(toks, 1, 16), ' ')
-        FROM base WHERE doc_id % 5 = 2 AND len(toks) >= 24
-        UNION ALL
-        SELECT doc_id + 4000000,
-          array_to_string(list_slice(toks, 9, len(toks)), ' ')
-        FROM base WHERE doc_id % 5 = 2 AND len(toks) >= 24),
-      hf AS (
-        SELECT doc_id,
-          md5(array_to_string(list_slice(t2, 1, 8), ' ')) AS head_fp,
-          md5(array_to_string(list_slice(t2, len(t2) - 7, len(t2)), ' '))
-            AS tail_fp
-        FROM (SELECT doc_id,
-            regexp_split_to_array(trim(text), '\s+') AS t2
-          FROM pag)
-        WHERE len(t2) >= 8)
-      SELECT a.doc_id AS prev_id, b.doc_id AS next_id
-      FROM hf a JOIN hf b
-        ON a.tail_fp = b.head_fp AND a.doc_id <> b.doc_id
-      ORDER BY prev_id, next_id""",
-    "x131_anneal_select" -> s"""$clfTrainedSql,
-      zs AS (SELECT doc_id, y,
-          CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
-            AS BIGINT) AS zq
-        FROM tf, w20 GROUP BY doc_id, y),
-      ps AS (SELECT doc_id,
-          CAST(ROUND((1 / (1 + exp(-(CAST(zq AS DOUBLE) / 1e9)))) * 1e6, 0)
-            AS BIGINT) AS pq
-        FROM zs),
-      sc AS (SELECT p.doc_id, p.pq, d.source,
-          CAST(len(regexp_split_to_array(trim(d.text), '\\s+')) AS BIGINT)
-            AS n_tok
-        FROM ps p JOIN documents d USING (doc_id)),
-      h AS (SELECT pq, CAST(COUNT(*) AS BIGINT) AS cnt FROM sc GROUP BY pq),
-      tt AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n FROM h),
-      c AS (SELECT pq, CAST(SUM(cnt) OVER (ORDER BY pq) AS BIGINT) AS cum
-        FROM h),
-      cut AS (SELECT MIN(pq) AS cut90 FROM c, tt WHERE cum * 10 >= n * 9)
-      SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        CAST(SUM(CASE WHEN pq > cut90 THEN 1 ELSE 0 END) AS BIGINT)
-          AS n_sel,
-        CAST(((2 * SUM(CASE WHEN pq > cut90 THEN 1 ELSE 0 END) * 10000
-            + COUNT(*)) // (2 * COUNT(*))) AS DOUBLE) / 1e4 AS sel_rate,
-        CAST(SUM(n_tok) AS BIGINT) AS n_tok,
-        CAST(SUM(CASE WHEN pq > cut90 THEN n_tok ELSE 0 END) AS BIGINT)
-          AS tok_sel,
-        CAST(((2 * SUM(CASE WHEN pq > cut90 THEN n_tok ELSE 0 END) * 10000
-            + SUM(n_tok)) // (2 * SUM(n_tok))) AS DOUBLE) / 1e4 AS tok_share
-      FROM sc, cut GROUP BY source ORDER BY source""",
-    "x130_quality_mad" -> s"""
-      WITH q AS (
-        SELECT source, CAST(ROUND(quality * 1e4, 0) AS BIGINT) AS q4
-        FROM (
-          SELECT source,
-            ROUND(LEAST(n_tok / 50.0, 1.0) * 0.4
-              + (1.0 - LEAST(punct_ratio * 5.0, 1.0)) * 0.3
-              + LEAST(stop_ratio * 10.0, 1.0) * 0.3, 4) AS quality
-          FROM (
-            SELECT source, len(toks) AS n_tok,
-              CAST(length(text) - length(regexp_replace(text,
-                  '[^A-Za-z0-9\\s]', '', 'g'))
-                AS DOUBLE) / GREATEST(length(text), 1) AS punct_ratio,
-              CAST(len(list_filter(toks, t -> t IN ('the','a','of','and')))
-                AS DOUBLE) / GREATEST(len(toks), 1) AS stop_ratio
-            FROM (SELECT source, text,
-                    regexp_split_to_array(trim(text), '\\s+') AS toks
-                  FROM documents)))),
-      h1 AS (SELECT source, q4, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM q GROUP BY 1, 2),
-      t1 AS (SELECT source, CAST(SUM(cnt) AS BIGINT) AS n
-        FROM h1 GROUP BY source),
-      c1 AS (SELECT h1.source, q4,
-          CAST(SUM(cnt) OVER (PARTITION BY h1.source ORDER BY q4)
-            AS BIGINT) AS cum, n
-        FROM h1 JOIN t1 USING (source)),
-      med AS (SELECT source, MIN(q4) AS medq, MIN(n) AS n
-        FROM c1 WHERE cum * 2 >= n + 1 GROUP BY source),
-      dv AS (SELECT q.source, ABS(q4 - medq) AS d4
-        FROM q JOIN med USING (source)),
-      h2 AS (SELECT source, d4, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM dv GROUP BY 1, 2),
-      t2 AS (SELECT source, CAST(SUM(cnt) AS BIGINT) AS n
-        FROM h2 GROUP BY source),
-      c2 AS (SELECT h2.source, d4,
-          CAST(SUM(cnt) OVER (PARTITION BY h2.source ORDER BY d4)
-            AS BIGINT) AS cum, n
-        FROM h2 JOIN t2 USING (source)),
-      mad AS (SELECT source, MIN(d4) AS madq
-        FROM c2 WHERE cum * 2 >= n + 1 GROUP BY source),
-      cut AS (SELECT med.source, medq, madq
-        FROM med JOIN mad USING (source))
-      SELECT q.source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        CAST(MIN(medq) AS DOUBLE) / 1e4 AS med_q,
-        CAST(MIN(madq) AS DOUBLE) / 1e4 AS mad_q,
-        CAST(SUM(CASE WHEN ABS(q4 - medq) > 3 * madq THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_outliers,
-        CAST(((2 * SUM(CASE WHEN ABS(q4 - medq) > 3 * madq
-            THEN 1 ELSE 0 END) * 10000 + COUNT(*)) // (2 * COUNT(*)))
-          AS DOUBLE) / 1e4 AS outlier_rate
-      FROM q JOIN cut USING (source)
-      GROUP BY q.source ORDER BY source""",
-    "x128_pairing_consistency" -> s"""
-      WITH bv AS (
-        SELECT vec_id, md5(array_to_string(list_transform(embedding,
-            x -> CAST(ROUND(CAST(x AS DOUBLE) * 1e6, 0) AS BIGINT)), ','))
-          AS s0
-        FROM embeddings WHERE vec_id < 200),
-      paired AS (
-        SELECT vec_id AS doc_id, s0 AS vfp FROM bv
-        UNION ALL SELECT vec_id + 1000000,
-          CASE WHEN (${md5Hash32Sql("CAST(vec_id + 1000000 AS VARCHAR)")})
-              % 13 = 5
-            THEN md5(s0 || 'x') ELSE s0 END
-        FROM bv
-        UNION ALL SELECT vec_id + 2000000, s0 FROM bv),
-      corpus AS (
-        SELECT doc_id, text FROM $corpusSql WHERE doc_id % 1000000 < 200),
-      fam AS (SELECT md5(c.text) AS fp, c.doc_id, p.vfp
-        FROM corpus c JOIN paired p USING (doc_id))
-      SELECT MIN(doc_id) AS family_id, CAST(COUNT(*) AS BIGINT) AS n_members,
-        CAST(COUNT(DISTINCT vfp) AS BIGINT) AS n_vfp,
-        (COUNT(DISTINCT vfp) = 1) AS consistent
-      FROM fam GROUP BY fp HAVING COUNT(*) >= 2 ORDER BY family_id""",
-    "x126_winnowing" -> s"""
-      WITH ${winnowCtesSql("SELECT doc_id, text FROM documents")},
-      ex AS (SELECT doc_id, unnest(fps) AS fp FROM wf),
-      nbr AS (SELECT a.doc_id,
-          CAST(COUNT(DISTINCT b.doc_id) AS BIGINT) AS n_nbr
-        FROM ex a JOIN ex b ON a.fp = b.fp AND a.doc_id <> b.doc_id
-        GROUP BY a.doc_id)
-      SELECT w.doc_id, w.m, w.n_sel,
-        CAST(((2 * w.n_sel * 10000 + w.m) // (2 * w.m)) AS DOUBLE) / 1e4
-          AS density,
-        CAST(COALESCE(n.n_nbr, 0) AS BIGINT) AS n_nbr
-      FROM wf w LEFT JOIN nbr n USING (doc_id) ORDER BY doc_id""",
-    "x125_jl_projection" -> {
-      val sgn = (0 until 16).map(c =>
-        s"($c, [${jlSigns(c, 64).mkString(", ")}])").mkString(", ")
-      s"""
-      WITH pr AS (
-        SELECT vec_id, c,
-          list_sum(list_transform(list_zip(embedding, s),
-            p -> CAST(p[1] AS DOUBLE) * p[2])) AS y
-        FROM embeddings, (VALUES $sgn) AS sgn(c, s)),
-      prl AS (SELECT vec_id, list(y ORDER BY c) AS ys
-        FROM pr GROUP BY vec_id),
-      base AS (
-        SELECT e.vec_id, e.embedding, p.ys
-        FROM embeddings e JOIN prl p USING (vec_id)),
-      qs AS (SELECT vec_id AS qid, embedding AS qe, ys AS qy
-        FROM base WHERE vec_id < 5),
-      sc AS (
-        SELECT q.qid, c.vec_id AS nid,
-          list_sum(list_transform(list_zip(q.qe, c.embedding),
-            p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
-              * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)))) AS d2o,
-          list_sum(list_transform(list_zip(q.qy, c.ys),
-            p -> (p[1] - p[2]) * (p[1] - p[2]))) AS d2p
-        FROM qs q, base c WHERE c.vec_id <> q.qid),
-      rk AS (
-        SELECT qid, nid, d2o, d2p,
-          ROW_NUMBER() OVER (PARTITION BY qid
-            ORDER BY ROUND(d2o, 6), nid) AS ro,
-          ROW_NUMBER() OVER (PARTITION BY qid
-            ORDER BY ROUND(d2p, 6), nid) AS rp,
-          CASE WHEN d2o > 0
-            THEN CAST(ROUND(d2p / (16 * d2o) * 1e4, 0) AS BIGINT) END AS rq4
-        FROM sc)
-      SELECT qid,
-        CAST(SUM(CASE WHEN ro <= 10 AND rp <= 10 THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_match,
-        CAST(SUM(CASE WHEN ro <= 10 AND rp <= 10 THEN 1 ELSE 0 END)
-          AS DOUBLE) / 10 AS recall_at_10,
-        CAST(((2 * SUM(rq4) + COUNT(rq4)) // (2 * COUNT(rq4)))
-          AS DOUBLE) / 1e4 AS ratio_mean,
-        CAST(MIN(rq4) AS DOUBLE) / 1e4 AS ratio_min,
-        CAST(MAX(rq4) AS DOUBLE) / 1e4 AS ratio_max
-      FROM rk GROUP BY qid ORDER BY qid"""
-    },
-    "x124_bbit_minhash" -> {
-      val params = graft.dedup.NearDup.minhashParams(16).zipWithIndex
-        .map { case ((a, b), j) => s"($j, ${a}::BIGINT, ${b}::BIGINT)" }
-        .mkString(", ")
-      s"""
-      WITH corpus AS (
-        SELECT doc_id, text FROM $corpusSql WHERE doc_id % 1000000 < 200),
-      docs AS (
-        SELECT doc_id, $sqlShingles3 AS shs
-        FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-              FROM corpus)),
-      sh AS (SELECT doc_id, unnest(shs) AS sh FROM docs),
-      hs AS (SELECT doc_id, ${md5Hash32Sql("sh")} AS h FROM sh),
-      minh AS (
-        SELECT doc_id, params.j,
-          MIN((h * params.a + params.b) % ${graft.dedup.NearDup.minhashPrime})
-            AS mh
-        FROM hs, (VALUES $params) AS params(j, a, b)
-        GROUP BY doc_id, params.j),
-      bands AS (
-        SELECT doc_id, j // 4 AS band,
-          string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j) AS key
-        FROM minh GROUP BY doc_id, j // 4),
-      cand AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
-        WHERE a.doc_id < b.doc_id),
-      sizes AS (SELECT doc_id, CAST(len(shs) AS BIGINT) AS n FROM docs),
-      inter AS (
-        SELECT c.id_a, c.id_b, CAST(COUNT(*) AS BIGINT) AS inter
-        FROM cand c JOIN sh a ON a.doc_id = c.id_a
-        JOIN sh b ON b.doc_id = c.id_b AND b.sh = a.sh
-        GROUP BY 1, 2),
-      ag AS (
-        SELECT c.id_a, c.id_b,
-          CAST(SUM(CASE WHEN ma.mh = mb.mh THEN 1 ELSE 0 END) AS BIGINT)
-            AS agree_full,
-          CAST(SUM(CASE WHEN ma.mh % 16 = mb.mh % 16 THEN 1 ELSE 0 END)
-            AS BIGINT) AS agree_b
-        FROM cand c JOIN minh ma ON ma.doc_id = c.id_a
-        JOIN minh mb ON mb.doc_id = c.id_b AND mb.j = ma.j
-        GROUP BY 1, 2),
-      p AS (
-        SELECT c.id_a, c.id_b, COALESCE(i.inter, 0) AS inter,
-          sa.n + sb.n - COALESCE(i.inter, 0) AS unn,
-          ag.agree_full, ag.agree_b
-        FROM cand c
-        LEFT JOIN inter i USING (id_a, id_b)
-        JOIN ag USING (id_a, id_b)
-        JOIN (SELECT doc_id AS id_a, n FROM sizes) sa USING (id_a)
-        JOIN (SELECT doc_id AS id_b, n FROM sizes) sb USING (id_b)),
-      e AS (
-        SELECT LEAST((inter * 10) // unn, 9) AS band, agree_full, agree_b,
-          (2 * (ABS(agree_full * unn - inter * 16) * 10000) + 16 * unn)
-            // (2 * 16 * unn) AS efq,
-          (2 * (ABS((agree_b - 1) * unn - inter * 15) * 10000) + 15 * unn)
-            // (2 * 15 * unn) AS ebq
-        FROM p)
-      SELECT band, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-        CAST(SUM(agree_full) AS BIGINT) AS sum_agree_full,
-        CAST(SUM(agree_b) AS BIGINT) AS sum_agree_b,
-        CAST(((2 * SUM(efq) + COUNT(*)) // (2 * COUNT(*))) AS DOUBLE) / 1e4
-          AS err_full,
-        CAST(((2 * SUM(ebq) + COUNT(*)) // (2 * COUNT(*))) AS DOUBLE) / 1e4
-          AS err_bbit
-      FROM e GROUP BY band ORDER BY band"""
-    },
-    "x61_quality_sampling" -> s"""
-      SELECT doc_id, source, quality,
-        CAST(h AS DOUBLE) / 4294967296.0 AS u,
-        quality * quality AS p_keep,
-        (CAST(h AS DOUBLE) / 4294967296.0) < (quality * quality) AS selected
-      FROM (
-        SELECT doc_id, source,
-          ROUND(LEAST(n_tok / 50.0, 1.0) * 0.4
-            + (1.0 - LEAST(punct_ratio * 5.0, 1.0)) * 0.3
-            + LEAST(stop_ratio * 10.0, 1.0) * 0.3, 4) AS quality,
-          ${md5Hash32Sql("CAST(doc_id AS VARCHAR)")} AS h
-        FROM (
-          SELECT doc_id, source, len(toks) AS n_tok,
-            CAST(length(text) - length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g'))
-              AS DOUBLE) / GREATEST(length(text), 1) AS punct_ratio,
-            CAST(len(list_filter(toks, t -> t IN ('the','a','of','and'))) AS DOUBLE)
-              / GREATEST(len(toks), 1) AS stop_ratio
-          FROM (SELECT doc_id, source, text,
-                  regexp_split_to_array(trim(text), '\\s+') AS toks
-                FROM documents)))
-      ORDER BY doc_id""",
-    "x105_threshold_sweep" -> {
-      val params = graft.dedup.NearDup.minhashParams(16).zipWithIndex
-        .map { case ((a, b), j) => s"($j, ${a}::BIGINT, ${b}::BIGINT)" }
-        .mkString(", ")
-      s"""
-      WITH corpus AS (
-        SELECT doc_id, text FROM $corpusSql WHERE doc_id % 1000000 < 200
-        UNION ALL
-        SELECT doc_id + 3000000,
-          array_to_string(list_slice(toks, 1,
-            CAST(FLOOR(len(toks) * 0.5) AS BIGINT)), ' ')
-        FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-              FROM documents WHERE doc_id % 1000000 < 200)
-        UNION ALL
-        SELECT doc_id + 4000000,
-          array_to_string(list_slice(toks, 1,
-            CAST(FLOOR(len(toks) * 0.75) AS BIGINT)), ' ')
-        FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-              FROM documents WHERE doc_id % 1000000 < 200)),
-      docs AS (
-        SELECT doc_id, $sqlShingles3 AS shs
-        FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-              FROM corpus)),
-      sh AS (SELECT doc_id, unnest(shs) AS sh FROM docs),
-      sizes AS (SELECT doc_id, len(shs) AS n FROM docs),
-      hs AS (SELECT doc_id, ${md5Hash32Sql("sh")} AS h FROM sh),
-      minh AS (
-        SELECT doc_id, params.j,
-          MIN((h * params.a + params.b) % ${graft.dedup.NearDup.minhashPrime}) AS mh
-        FROM hs, (VALUES $params) AS params(j, a, b)
-        GROUP BY doc_id, params.j),
-      bands AS (
-        SELECT doc_id, j // 4 AS band,
-          string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j) AS key
-        FROM minh GROUP BY doc_id, j // 4),
-      cand AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
-        WHERE a.doc_id < b.doc_id),
-      inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2),
-      jc AS (
-        SELECT c.id_a, c.id_b,
-          ROUND(CAST(i.inter AS DOUBLE) / (sa.n + sb.nb - i.inter), 4)
-            AS jaccard
-        FROM cand c
-        JOIN inter i USING (id_a, id_b)
-        JOIN (SELECT doc_id AS id_a, n FROM sizes) sa USING (id_a)
-        JOIN (SELECT doc_id AS id_b, n AS nb FROM sizes) sb USING (id_b)
-        WHERE ROUND(CAST(i.inter AS DOUBLE) / (sa.n + sb.nb - i.inter), 4)
-          >= 0.3),
-      tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_total FROM corpus),
-      ex AS (SELECT unnest([id_a, id_b]) AS doc_id, jaccard FROM jc),
-      sweep AS (
-        SELECT u.t10, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs_dup
-        FROM ex, UNNEST(range(3, 10)) AS u(t10)
-        WHERE ex.jaccard >= CAST(u.t10 AS DOUBLE) / 10
-        GROUP BY u.t10)
-      SELECT CAST(t10 AS DOUBLE) / 10 AS threshold, n_docs_dup, n_total,
-        CAST((2 * n_docs_dup * 10000 + n_total) // (2 * n_total) AS DOUBLE)
-          / 1e4 AS share
-      FROM sweep, tot ORDER BY threshold"""
-    },
-    "x91_lsh_precision" -> {
-      val params = graft.dedup.NearDup.minhashParams(16).zipWithIndex
-        .map { case ((a, b), j) => s"($j, ${a}::BIGINT, ${b}::BIGINT)" }
-        .mkString(", ")
-      s"""
-      WITH corpus AS (
-        SELECT doc_id, text FROM $corpusSql WHERE doc_id % 1000000 < 200
-        UNION ALL
-        SELECT doc_id + 3000000,
-          array_to_string(list_slice(toks, 1,
-            CAST(FLOOR(len(toks) * 0.5) AS BIGINT)), ' ')
-        FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-              FROM documents WHERE doc_id % 1000000 < 200)
-        UNION ALL
-        SELECT doc_id + 4000000,
-          array_to_string(list_slice(toks, 1,
-            CAST(FLOOR(len(toks) * 0.75) AS BIGINT)), ' ')
-        FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-              FROM documents WHERE doc_id % 1000000 < 200)),
-      docs AS (
-        SELECT doc_id, $sqlShingles3 AS shs
-        FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-              FROM corpus)),
-      sh AS (SELECT doc_id, unnest(shs) AS sh FROM docs),
-      sizes AS (SELECT doc_id, len(shs) AS n FROM docs),
-      hs AS (SELECT doc_id, ${md5Hash32Sql("sh")} AS h FROM sh),
-      minh AS (
-        SELECT doc_id, params.j,
-          MIN((h * params.a + params.b) % ${graft.dedup.NearDup.minhashPrime}) AS mh
-        FROM hs, (VALUES $params) AS params(j, a, b)
-        GROUP BY doc_id, params.j),
-      bands AS (
-        SELECT doc_id, j // 4 AS band,
-          string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j) AS key
-        FROM minh GROUP BY doc_id, j // 4),
-      cand AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
-        WHERE a.doc_id < b.doc_id),
-      inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2),
-      jc AS (
-        SELECT LEAST(FLOOR(ROUND(CAST(i.inter AS DOUBLE)
-            / (sa.n + sb.nb - i.inter), 4) * 10) / 10, 0.9) AS band
-        FROM cand c
-        JOIN inter i USING (id_a, id_b)
-        JOIN (SELECT doc_id AS id_a, n FROM sizes) sa USING (id_a)
-        JOIN (SELECT doc_id AS id_b, n AS nb FROM sizes) sb USING (id_b)
-        WHERE ROUND(CAST(i.inter AS DOUBLE) / (sa.n + sb.nb - i.inter), 4) > 0),
-      g AS (SELECT band, COUNT(*) AS n_cand FROM jc GROUP BY band),
-      tot AS (SELECT band, n_cand, SUM(n_cand) OVER () AS n_total FROM g)
-      SELECT band, CAST(n_cand AS BIGINT) AS n_cand,
-        CAST((2 * n_cand * 10000 + n_total) // (2 * n_total) AS DOUBLE) / 1e4
-          AS share,
-        band < 0.5 AS below_threshold
-      FROM tot ORDER BY band"""
-    },
-    "x62_lsh_eval" -> {
-      val params = graft.dedup.NearDup.minhashParams(16).zipWithIndex
-        .map { case ((a, b), j) => s"($j, ${a}::BIGINT, ${b}::BIGINT)" }
-        .mkString(", ")
-      s"""
-      WITH corpus AS (
-        SELECT doc_id, text FROM $corpusSql WHERE doc_id % 1000000 < 200
-        UNION ALL
-        SELECT doc_id + 3000000,
-          array_to_string(list_slice(toks, 1,
-            CAST(FLOOR(len(toks) * 0.5) AS BIGINT)), ' ')
-        FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-              FROM documents WHERE doc_id % 1000000 < 200)
-        UNION ALL
-        SELECT doc_id + 4000000,
-          array_to_string(list_slice(toks, 1,
-            CAST(FLOOR(len(toks) * 0.75) AS BIGINT)), ' ')
-        FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-              FROM documents WHERE doc_id % 1000000 < 200)),
-      docs AS (
-        SELECT doc_id, $sqlShingles3 AS shs
-        FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-              FROM corpus)),
-      sh AS (SELECT doc_id, unnest(shs) AS sh FROM docs),
-      sizes AS (SELECT doc_id, len(shs) AS n FROM docs),
-      inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2),
-      truth AS (
-        SELECT id_a, id_b,
-          ROUND(CAST(inter AS DOUBLE) / (na + nb - inter), 4) AS jaccard
-        FROM inter
-        JOIN (SELECT doc_id AS id_a, n AS na FROM sizes) USING (id_a)
-        JOIN (SELECT doc_id AS id_b, n AS nb FROM sizes) USING (id_b)
-        WHERE ROUND(CAST(inter AS DOUBLE) / (na + nb - inter), 4) >= 0.3),
-      hs AS (SELECT doc_id, ${md5Hash32Sql("sh")} AS h FROM sh),
-      minh AS (
-        SELECT doc_id, params.j,
-          MIN((h * params.a + params.b) % ${graft.dedup.NearDup.minhashPrime}) AS mh
-        FROM hs, (VALUES $params) AS params(j, a, b)
-        GROUP BY doc_id, params.j),
-      bands AS (
-        SELECT doc_id, j // 4 AS band,
-          string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j) AS key
-        FROM minh GROUP BY doc_id, j // 4),
-      cand AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
-        WHERE a.doc_id < b.doc_id),
-      det AS (
-        SELECT t.jaccard,
-          CASE WHEN c.id_a IS NOT NULL THEN 1 ELSE 0 END AS hit
-        FROM truth t LEFT JOIN cand c USING (id_a, id_b)),
-      g AS (
-        SELECT LEAST(FLOOR(jaccard * 10) / 10, 0.9) AS band,
-          CAST(COUNT(*) AS BIGINT) AS n_truth,
-          CAST(SUM(hit) AS BIGINT) AS n_found
-        FROM det GROUP BY 1),
-      mm AS (SELECT band, n_truth, n_found,
-        (band + 0.05) * (band + 0.05) AS m2 FROM g),
-      m4t AS (SELECT band, n_truth, n_found, m2 * m2 AS m4 FROM mm),
-      ms AS (SELECT band, n_truth, n_found,
-        (1.0 - m4) * (1.0 - m4) AS miss2 FROM m4t)
-      SELECT band, n_truth, n_found,
-        CAST((2 * abs(n_found * 10000) + n_truth) // (2 * n_truth)
-          AS DOUBLE) / 1e4 AS recall,
-        ROUND((1.0 - miss2 * miss2) * 1e4, 0) / 1e4 AS recall_model
-      FROM ms ORDER BY band"""
-    },
-    "x58_containment_dedup" -> s"""
-      WITH corpus AS (
-        SELECT doc_id, text FROM $corpusSql WHERE doc_id % 1000000 < 200
-        UNION ALL
-        SELECT doc_id + 3000000,
-          array_to_string(list_slice(
-            regexp_split_to_array(trim(text), '\\s+'), 1, 12), ' ')
-        FROM documents WHERE doc_id % 1000000 < 200),
-      sh AS (
-        SELECT doc_id, unnest($sqlShingles3) AS sh
-        FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-              FROM corpus)),
-      sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-      inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2)
-      SELECT id_a, id_b,
-        ROUND(CAST(inter AS DOUBLE) / LEAST(na, nb), 4) AS containment,
-        ROUND(CAST(inter AS DOUBLE) / (na + nb - inter), 4) AS jaccard
-      FROM inter
-      JOIN (SELECT doc_id AS id_a, n AS na FROM sizes) USING (id_a)
-      JOIN (SELECT doc_id AS id_b, n AS nb FROM sizes) USING (id_b)
-      WHERE ROUND(CAST(inter AS DOUBLE) / LEAST(na, nb), 4) >= 0.9
-      ORDER BY id_a, id_b""",
-    "x59_dedup_mass" -> s"""
-      $dedupClusterCtes,
-      toks AS (SELECT c.doc_id, c.doc_id % 1000000 AS base_id,
-        len(regexp_split_to_array(trim(c.text), '\\s+')) AS tok
-        FROM corpus c),
-      kept AS (SELECT doc_id FROM labels WHERE doc_id = canonico)
-      SELECT d.source,
-        CAST(COUNT(*) AS BIGINT) AS n_docs,
-        CAST(SUM(CASE WHEN k.doc_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-          AS n_kept,
-        CAST(SUM(t.tok) AS BIGINT) AS tok_total,
-        CAST(SUM(CASE WHEN k.doc_id IS NOT NULL THEN t.tok ELSE 0 END)
-          AS BIGINT) AS tok_kept,
-        CAST((2 * abs(CAST(SUM(CASE WHEN k.doc_id IS NOT NULL THEN t.tok
-              ELSE 0 END) AS BIGINT) * 10000) + CAST(SUM(t.tok) AS BIGINT))
-            // (2 * CAST(SUM(t.tok) AS BIGINT)) AS DOUBLE) / 1e4
-          AS kept_frac
-      FROM toks t
-      LEFT JOIN kept k ON k.doc_id = t.doc_id
-      JOIN documents d ON d.doc_id = t.base_id
-      GROUP BY d.source ORDER BY d.source""",
-    "x53_char_entropy" -> """
-      WITH cs AS (SELECT doc_id, unnest(string_split(text, '')) AS ch
-        FROM documents),
-      counts AS (SELECT doc_id, ch, CAST(COUNT(*) AS BIGINT) AS c
-        FROM cs GROUP BY doc_id, ch),
-      wn AS (SELECT doc_id, c,
-        CAST(SUM(c) OVER (PARTITION BY doc_id) AS BIGINT) AS n FROM counts),
-      tq AS (SELECT doc_id, c, n,
-        CAST(ROUND(LN(CAST(c AS DOUBLE) / CAST(n AS DOUBLE)) * 1e4, 0)
-          AS BIGINT) AS tq FROM wn),
-      agg AS (SELECT doc_id, CAST(MAX(n) AS BIGINT) AS n_chars,
-          CAST(COUNT(*) AS BIGINT) AS n_distinct,
-          CAST(-SUM(c * tq) AS BIGINT) AS mhq
-        FROM tq GROUP BY doc_id)
-      SELECT doc_id, n_chars, n_distinct,
-        CAST((CASE WHEN mhq < 0 THEN -1 ELSE 1 END)
-          * ((2 * abs(mhq) + n_chars) // (2 * n_chars)) AS DOUBLE)
-          / 1e4 / 0.6931471805599453 AS entropy_bits
-      FROM agg ORDER BY doc_id""",
-    "x54_token_fertility" -> """
-      WITH t AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        CAST(SUM(len(regexp_split_to_array(trim(text), '\s+'))) AS BIGINT)
-          AS n_words,
-        CAST(SUM(len(regexp_extract_all(text,
-          '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))) AS BIGINT) AS n_bpeish,
-        CAST(SUM(strlen(text)) AS BIGINT) AS n_bytes
-        FROM documents GROUP BY source)
-      SELECT source, n_docs, n_words, n_bpeish, n_bytes,
-        CAST((2 * abs(n_bpeish * 10000) + n_words) // (2 * n_words)
-          AS DOUBLE) / 1e4 AS fertility,
-        CAST((2 * abs(n_bytes * 10000) + n_bpeish) // (2 * n_bpeish)
-          AS DOUBLE) / 1e4 AS bytes_per_tok
-      FROM t ORDER BY source""",
-    "x55_lang_divergence" -> """
-      WITH cnts AS (SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS c
-        FROM documents GROUP BY source, lang),
-      st AS (SELECT source, CAST(SUM(c) AS BIGINT) AS ns
-        FROM cnts GROUP BY source),
-      lt AS (SELECT lang, CAST(SUM(c) AS BIGINT) AS cq
-        FROM cnts GROUP BY lang),
-      tt AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM cnts),
-      grid AS (SELECT s.source, s.ns, l.lang, l.cq, t.n,
-          COALESCE(c.c, 0) AS c
-        FROM st s CROSS JOIN lt l CROSS JOIN tt t
-        LEFT JOIN cnts c ON c.source = s.source AND c.lang = l.lang),
-      terms AS (SELECT source, ns, n, c, cq,
-        CASE WHEN c > 0 THEN CAST(ROUND(LN(
-            (CAST(c AS DOUBLE) / CAST(ns AS DOUBLE))
-            / ((CAST(c AS DOUBLE) / CAST(ns AS DOUBLE)
-              + CAST(cq AS DOUBLE) / CAST(n AS DOUBLE)) / 2)) * 1e6, 0)
-          AS BIGINT) ELSE 0 END AS tp,
-        CAST(ROUND(LN(
-            (CAST(cq AS DOUBLE) / CAST(n AS DOUBLE))
-            / ((CAST(c AS DOUBLE) / CAST(ns AS DOUBLE)
-              + CAST(cq AS DOUBLE) / CAST(n AS DOUBLE)) / 2)) * 1e6, 0)
-          AS BIGINT) AS tqq
-        FROM grid),
-      agg AS (SELECT source, CAST(MAX(ns) AS BIGINT) AS n_docs,
-          CAST(MAX(n) AS BIGINT) AS n,
-          CAST(SUM(c * tp) AS BIGINT) AS hp,
-          CAST(SUM(cq * tqq) AS BIGINT) AS hq
-        FROM terms GROUP BY source)
-      SELECT source, n_docs,
-        CAST((CASE WHEN hp < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(hp) + n_docs) // (2 * n_docs))
-          + (CASE WHEN hq < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(hq) + n) // (2 * n)) AS DOUBLE)
-          / 2e6 / 0.6931471805599453 AS jsd_bits
-      FROM agg ORDER BY source""",
-    "x56_chunk_documents" -> """
-      WITH t AS (SELECT doc_id,
-          regexp_split_to_array(trim(text), '\s+') AS toks FROM documents),
-      base AS (SELECT doc_id, toks, len(toks) AS n_tok,
-        CAST(ceil(CAST(greatest(len(toks) - 128, 0) AS DOUBLE) / 96.0)
-          AS BIGINT) + 1 AS n_chunks FROM t),
-      ch AS (SELECT doc_id, toks, n_tok,
-        unnest(range(0, n_chunks)) AS chunk_id FROM base)
-      SELECT doc_id, CAST(chunk_id AS INT) AS chunk_id,
-        CAST(chunk_id * 96 AS INT) AS tok_start,
-        CAST(LEAST(n_tok - chunk_id * 96, 128) AS INT) AS n_chunk_tok,
-        md5(array_to_string(list_slice(toks, chunk_id * 96 + 1,
-          chunk_id * 96 + LEAST(n_tok - chunk_id * 96, 128)), ' ')) AS fp
-      FROM ch ORDER BY doc_id, chunk_id""",
-    "x57_embed_outliers" -> """
-      WITH d1 AS (SELECT vec_id, label,
-          unnest(range(0, len(embedding))) AS i,
-          unnest(embedding) AS xi
-        FROM embeddings),
-      q1 AS (SELECT vec_id, label, i,
-          CAST(ROUND(CAST(xi AS DOUBLE) * 1e6, 0) AS BIGINT) AS qi FROM d1),
-      nn AS (SELECT COUNT(*) AS n FROM embeddings),
-      dims AS (SELECT CAST(COUNT(DISTINCT i) AS BIGINT) AS d FROM q1),
-      diag AS (SELECT i, CAST(SUM(qi) AS BIGINT) AS s_,
-          CAST(SUM(qi * qi) AS BIGINT) AS ss_
-        FROM q1 GROUP BY i),
-      dv AS (SELECT i, s_,
-          CAST(nn.n AS DOUBLE) * CAST(ss_ AS DOUBLE)
-            - CAST(s_ AS DOUBLE) * CAST(s_ AS DOUBLE) AS v_
-        FROM diag CROSS JOIN nn),
-      z2 AS (SELECT q1.vec_id, q1.label,
-          CASE WHEN dg.v_ > 0 THEN
-            CAST(ROUND(CAST(nn.n * qi - dg.s_ AS DOUBLE)
-              * CAST(nn.n * qi - dg.s_ AS DOUBLE)
-              / dg.v_ * 1e6, 0) AS BIGINT)
-          ELSE 0 END AS z2q
-        FROM q1 JOIN dv dg ON dg.i = q1.i CROSS JOIN nn),
-      agg AS (SELECT vec_id, label,
-          CAST(SUM(z2q) AS BIGINT) AS sz FROM z2 GROUP BY vec_id, label),
-      rz AS (SELECT vec_id, label,
-          sqrt(CAST((CASE WHEN sz * 100 < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(sz * 100) + dd.d) // (2 * dd.d)) AS DOUBLE)) / 1e4
-            AS rms_z
-        FROM agg CROSS JOIN dims dd)
-      SELECT vec_id, label, rms_z, rms_z > 1.2 AS is_outlier
-      FROM rz ORDER BY vec_id""",
-    "x25_pack_sequences" -> """
-      WITH d AS (
-        SELECT doc_id, source,
-          CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tok,
-          CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % 4
-            AS INT) AS sub_shard
-        FROM documents
-        WHERE len(regexp_split_to_array(trim(text), '\s+')) > 0),
-      o AS (
-        SELECT doc_id, source, sub_shard, n_tok,
-          CAST(SUM(n_tok) OVER (PARTITION BY source, sub_shard ORDER BY doc_id)
-            - n_tok AS BIGINT) AS ini
-        FROM d),
-      e AS (
-        SELECT source, sub_shard, doc_id, ini, n_tok,
-          CAST(unnest(range(ini // 256, (ini + n_tok - 1) // 256 + 1)) AS BIGINT)
-            AS seq_id
-        FROM o)
-      SELECT source, sub_shard, seq_id,
-        CAST(COUNT(*) AS BIGINT) AS n_docs,
-        CAST(SUM(LEAST(ini + n_tok, (seq_id + 1) * 256)
-          - GREATEST(ini, seq_id * 256)) AS BIGINT) AS n_tokens,
-        MIN(doc_id) AS first_doc,
-        MAX(doc_id) AS last_doc
-      FROM e GROUP BY source, sub_shard, seq_id
-      ORDER BY source, sub_shard, seq_id""",
-    "x121_pack_boundary" -> """
-      WITH d AS (
-        SELECT doc_id, source,
-          CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tok,
-          CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % 4
-            AS INT) AS sub_shard
-        FROM documents
-        WHERE len(regexp_split_to_array(trim(text), '\s+')) > 0),
-      o AS (
-        SELECT doc_id, source, sub_shard, n_tok,
-          CAST(SUM(n_tok) OVER (PARTITION BY source, sub_shard ORDER BY doc_id)
-            - n_tok AS BIGINT) AS ini
-        FROM d),
-      e AS (
-        SELECT source, sub_shard, doc_id, ini, n_tok,
-          CAST(unnest(range(ini // 256, (ini + n_tok - 1) // 256 + 1)) AS BIGINT)
-            AS seq_id
-        FROM o),
-      seqs AS (
-        SELECT source, sub_shard, seq_id,
-          CAST(COUNT(*) AS BIGINT) AS nd,
-          CAST(SUM(seg) AS BIGINT) AS l,
-          CAST(SUM(seg * seg) AS BIGINT) AS s2
-        FROM (SELECT source, sub_shard, seq_id,
-            LEAST(ini + n_tok, (seq_id + 1) * 256)
-              - GREATEST(ini, seq_id * 256) AS seg
-          FROM e)
-        GROUP BY 1, 2, 3)
-      SELECT source,
-        CAST(COUNT(*) AS BIGINT) AS n_seqs,
-        CAST(SUM(nd) AS BIGINT) AS n_segments,
-        CAST(MAX(nd) AS BIGINT) AS max_docs_seq,
-        CAST(((2 * SUM(nd) * 10000 + COUNT(*)) // (2 * COUNT(*)))
-          AS DOUBLE) / 1e4 AS mean_docs_seq,
-        CAST(((2 * SUM(l * l - s2) * 10000 + SUM(l * l)) // (2 * SUM(l * l)))
-          AS DOUBLE) / 1e4 AS cross_frac
-      FROM seqs GROUP BY source ORDER BY source""",
-    "x26_pii_redaction" -> s"""
-      SELECT doc_id,
-        CAST(len(regexp_extract_all(text,
-          '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}')) AS INT) AS n_emails,
-        CAST(len(regexp_extract_all(text,
-          '\\(\\d{2}\\) \\d{4,5}-\\d{4}')) AS INT) AS n_phones,
-        md5(regexp_replace(regexp_replace(text,
-          '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-          '\\(\\d{2}\\) \\d{4,5}-\\d{4}', '[TELEFONE]', 'g')) AS fp_redigido
-      FROM $piiCorpusSql
-      ORDER BY doc_id""",
-    "x27_domain_mixture" -> """
-      WITH d AS (
-        SELECT doc_id, source,
-          CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tok,
-          md5(CAST(doc_id AS VARCHAR)) AS amostra_chave,
-          CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % 4
-            AS INT) AS sub_shard
-        FROM documents),
-      q AS (
-        SELECT source, sub_shard,
-          CAST((500 * SUM(n_tok))
-            // (SUM(SUM(n_tok)) OVER (PARTITION BY source)) AS BIGINT) AS cota
-        FROM d GROUP BY source, sub_shard),
-      o AS (
-        SELECT source, sub_shard, doc_id, n_tok,
-          CAST(SUM(n_tok) OVER (PARTITION BY source, sub_shard
-            ORDER BY amostra_chave) - n_tok AS BIGINT) AS tok_antes
-        FROM d)
-      SELECT o.source, o.sub_shard, o.doc_id, o.n_tok, o.tok_antes, q.cota
-      FROM o JOIN q ON o.source = q.source AND o.sub_shard = q.sub_shard
-      WHERE o.tok_antes < q.cota
-      ORDER BY o.source, o.doc_id""",
-    "x28_label_centroids" -> """
-      SELECT label, CAST(i - 1 AS INT) AS pos,
-        CAST(SUM(CAST(FLOOR(CAST(embedding[i] AS DOUBLE) * 16777216)
-            AS BIGINT)) AS DOUBLE)
-          / (CAST(COUNT(*) AS DOUBLE) * 16777216) AS comp,
-        CAST(COUNT(*) AS BIGINT) AS n
-      FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS t(i)
-      GROUP BY label, i
-      ORDER BY label, pos""",
-    "x104_pairing_audit" -> s"""
-      WITH vecs AS (SELECT vec_id AS doc_id, 1 AS has_vec
-        FROM embeddings
-        WHERE ${md5Hash32Sql("CAST(vec_id AS VARCHAR)")} % 10 <> 7),
-      per_source AS (
-        SELECT d.source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-          CAST(COALESCE(SUM(v.has_vec), 0) AS BIGINT) AS n_paired
-        FROM documents d LEFT JOIN vecs v USING (doc_id)
-        GROUP BY d.source),
-      orphans AS (
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_orphan_vecs
-        FROM vecs v LEFT JOIN documents d USING (doc_id)
-        WHERE d.doc_id IS NULL)
-      SELECT source, n_docs, n_paired,
-        n_docs - n_paired AS n_missing_vec,
-        CAST((2 * n_paired * 10000 + n_docs) // (2 * n_docs) AS DOUBLE) / 1e4
-          AS coverage,
-        n_orphan_vecs
-      FROM per_source, orphans ORDER BY source""",
-    "x103_span_corruption" -> s"""
-      WITH t AS (SELECT doc_id,
-          regexp_split_to_array(trim(text), '\\s+') AS toks
-        FROM documents),
-      b AS (SELECT doc_id, toks,
-          (len(toks) + 2) // 3 AS n_blocks,
-          list_transform(range(0, (len(toks) + 2) // 3), bb ->
-            ${md5Hash32Sql("CAST(doc_id AS VARCHAR) || ':' || CAST(bb AS VARCHAR)")} % 100 < 15)
-            AS flags
-        FROM t),
-      r AS (SELECT doc_id, toks, n_blocks, flags,
-          list_transform(range(0, n_blocks), bb ->
-            COALESCE(list_sum(list_transform(list_slice(flags, 1, bb),
-              f -> CASE WHEN f THEN 1 ELSE 0 END)), 0)) AS ranks
-        FROM b),
-      p AS (SELECT doc_id, toks, n_blocks, flags,
-          flatten(list_transform(range(0, n_blocks), bb ->
-            CASE WHEN flags[bb + 1]
-              THEN ['<extra_id_' || CAST(ranks[bb + 1] AS VARCHAR) || '>']
-              ELSE list_slice(toks, bb * 3 + 1, bb * 3 + 3) END)) AS inp,
-          flatten(list_transform(range(0, n_blocks), bb ->
-            CASE WHEN flags[bb + 1]
-              THEN list_prepend('<extra_id_' || CAST(ranks[bb + 1] AS VARCHAR) || '>',
-                list_slice(toks, bb * 3 + 1, bb * 3 + 3))
-              ELSE [] END)) AS tgt
-        FROM r)
-      SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tok,
-        CAST(n_blocks AS BIGINT) AS n_blocks,
-        CAST(len(list_filter(flags, f -> f)) AS BIGINT) AS n_masked_blocks,
-        CAST(len(tgt) - len(list_filter(flags, f -> f)) AS BIGINT)
-          AS n_masked_tok,
-        md5(COALESCE(array_to_string(inp, ' '), '')) AS input_md5,
-        md5(COALESCE(array_to_string(tgt, ' '), '')) AS target_md5
-      FROM p ORDER BY doc_id""",
-    "x102_cms_heavyhitters" -> s"""
-      WITH toks AS (SELECT
-          unnest(regexp_split_to_array(trim(text), '\\s+')) AS w
-        FROM documents),
-      ex AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c_exact
-        FROM toks GROUP BY w),
-      rws AS (SELECT hrow, bucket, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM (SELECT u.hrow,
-            ${md5Hash32Sql("CAST(u.hrow AS VARCHAR) || ':' || w")} % 1024
-              AS bucket
-          FROM toks, UNNEST(range(0, 4)) AS u(hrow))
-        GROUP BY hrow, bucket),
-      top AS (SELECT w, c_exact, rk FROM (
-          SELECT w, c_exact,
-            ROW_NUMBER() OVER (ORDER BY c_exact DESC, w) AS rk
-          FROM ex) WHERE rk <= 20),
-      tb AS (SELECT t.w, t.c_exact, t.rk, u.hrow,
-          ${md5Hash32Sql("CAST(u.hrow AS VARCHAR) || ':' || t.w")} % 1024
-            AS bucket
-        FROM top t, UNNEST(range(0, 4)) AS u(hrow)),
-      est AS (SELECT tb.w, tb.c_exact, tb.rk,
-          CAST(MIN(r.cnt) AS BIGINT) AS c_cms
-        FROM tb JOIN rws r ON r.hrow = tb.hrow AND r.bucket = tb.bucket
-        GROUP BY tb.w, tb.c_exact, tb.rk)
-      SELECT w, c_exact, c_cms, c_cms >= c_exact AS within_bound,
-        CAST(rk AS BIGINT) AS rk
-      FROM est ORDER BY rk""",
-    "x101_pq_health" -> s"""
-      WITH f AS (SELECT vec_id, 0 AS m, embedding AS sub FROM embeddings),
-      c0f AS (SELECT m, CAST(vec_id AS INT) AS cid, sub AS ce
-        FROM f WHERE vec_id < 16),
-      ${pqAssignSql("f", "c0f", "a0f")},
-      ${pqCentSql("a0f", "c1f")},
-      ${pqAssignSql("f", "c1f", "a1f")},
-      ${pqCentSql("a1f", "c2f")},
-      ${pqAssignSql("f", "c2f", "af")},
-      res AS (SELECT a.vec_id,
-          list_transform(list_zip(a.sub, c.ce),
-            p -> CAST(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) AS FLOAT))
-            AS r
-        FROM af a JOIN c2f c ON c.m = a.m AND c.cid = a.cell),
-      rsub AS (SELECT vec_id, m, list_slice(r, m * 8 + 1, m * 8 + 8) AS sub
-        FROM res, UNNEST(range(0, 8)) AS t(m)),
-      c0 AS (SELECT m, CAST(vec_id AS INT) AS cid, sub AS ce
-        FROM rsub WHERE vec_id < 16),
-      ${pqAssignSql("rsub", "c0", "a0")},
-      ${pqCentSql("a0", "c1")},
-      ${pqAssignSql("rsub", "c1", "a1")},
-      ${pqCentSql("a1", "c2")},
-      ${pqAssignSql("rsub", "c2", "codes")},
-      dist AS (SELECT k.vec_id, k.m, k.cell AS code,
-          CAST(ROUND(${pqL2Sql("k.sub", "c.ce")} * 1e6, 0) AS BIGINT) AS dq
-        FROM codes k JOIN c2 c ON c.m = k.m AND c.cid = k.cell),
-      pc AS (SELECT m, code, COUNT(*) AS c, CAST(SUM(dq) AS BIGINT) AS sd
-        FROM dist GROUP BY m, code),
-      agg AS (SELECT m, COUNT(*) AS n_used, CAST(SUM(c) AS BIGINT) AS n,
-          CAST(SUM(sd) AS BIGINT) AS dist_total_q,
-          CAST(SUM(c * CAST(ROUND(LN(CAST(c AS DOUBLE)) * 1e6, 0) AS BIGINT))
-            AS BIGINT) AS clogc_q
-        FROM pc GROUP BY m)
-      SELECT m, CAST(n_used AS BIGINT) AS n_used,
-        (CAST(CAST(ROUND(LN(CAST(n AS DOUBLE)) * 1e6, 0) AS BIGINT) * n
-          - clogc_q AS DOUBLE) / (CAST(n AS DOUBLE) * 1e6)) / LN(2.0)
-          AS entropy_bits,
-        CAST(dist_total_q AS DOUBLE) / (CAST(n AS DOUBLE) * 1e6) AS mse
-      FROM agg ORDER BY m""",
-    "x100_ivfpq_query" -> s"""
-      WITH f AS (SELECT vec_id, 0 AS m, embedding AS sub FROM embeddings),
-      c0f AS (SELECT m, CAST(vec_id AS INT) AS cid, sub AS ce
-        FROM f WHERE vec_id < 16),
-      ${pqAssignSql("f", "c0f", "a0f")},
-      ${pqCentSql("a0f", "c1f")},
-      ${pqAssignSql("f", "c1f", "a1f")},
-      ${pqCentSql("a1f", "c2f")},
-      ${pqAssignSql("f", "c2f", "af")},
-      res AS (SELECT a.vec_id, a.cell,
-          list_transform(list_zip(a.sub, c.ce),
-            p -> CAST(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) AS FLOAT))
-            AS r
-        FROM af a JOIN c2f c ON c.m = a.m AND c.cid = a.cell),
-      rsub AS (SELECT vec_id, m, list_slice(r, m * 8 + 1, m * 8 + 8) AS sub
-        FROM res, UNNEST(range(0, 8)) AS t(m)),
-      c0 AS (SELECT m, CAST(vec_id AS INT) AS cid, sub AS ce
-        FROM rsub WHERE vec_id < 16),
-      ${pqAssignSql("rsub", "c0", "a0")},
-      ${pqCentSql("a0", "c1")},
-      ${pqAssignSql("rsub", "c1", "a1")},
-      ${pqCentSql("a1", "c2")},
-      ${pqAssignSql("rsub", "c2", "codes")},
-      probes AS (SELECT qid, cell, qce, qe FROM (
-          SELECT q.vec_id AS qid, c.cid AS cell, c.ce AS qce,
-            q.embedding AS qe,
-            ROW_NUMBER() OVER (PARTITION BY q.vec_id
-              ORDER BY CAST(ROUND(${pqL2Sql("q.embedding", "c.ce")} * 1e6, 0)
-                AS BIGINT), c.cid) AS rk
-          FROM embeddings q, c2f c WHERE q.vec_id < 5) WHERE rk <= 4),
-      qr AS (SELECT qid, cell,
-          list_transform(list_zip(qe, qce),
-            p -> CAST(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) AS FLOAT))
-            AS qr
-        FROM probes),
-      qrs AS (SELECT qid, cell, m, list_slice(qr, m * 8 + 1, m * 8 + 8)
-            AS qsub
-        FROM qr, UNNEST(range(0, 8)) AS t(m)),
-      nce AS (SELECT k.vec_id AS nid, k.m, c.ce, a.cell
-        FROM codes k
-        JOIN c2 c ON c.m = k.m AND c.cid = k.cell
-        JOIN af a ON a.vec_id = k.vec_id),
-      adc AS (SELECT s.qid, n.nid,
-          CAST(SUM(CAST(ROUND(${pqL2Sql("s.qsub", "n.ce")} * 1e6, 0)
-            AS BIGINT)) AS BIGINT) AS dist_q
-        FROM qrs s JOIN nce n ON n.cell = s.cell AND n.m = s.m
-        WHERE n.nid <> s.qid GROUP BY s.qid, n.nid),
-      r AS (SELECT qid, nid, dist_q,
-          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dist_q, nid) AS rk
-        FROM adc)
-      SELECT qid, nid, dist_q, CAST(rk AS INT) AS rk
-      FROM r WHERE rk <= 10 ORDER BY qid, rk""",
-    "x129_adc_rerank" -> s"""
-      WITH f AS (SELECT vec_id, 0 AS m, embedding AS sub FROM embeddings),
-      c0f AS (SELECT m, CAST(vec_id AS INT) AS cid, sub AS ce
-        FROM f WHERE vec_id < 16),
-      ${pqAssignSql("f", "c0f", "a0f")},
-      ${pqCentSql("a0f", "c1f")},
-      ${pqAssignSql("f", "c1f", "a1f")},
-      ${pqCentSql("a1f", "c2f")},
-      ${pqAssignSql("f", "c2f", "af")},
-      res AS (SELECT a.vec_id, a.cell,
-          list_transform(list_zip(a.sub, c.ce),
-            p -> CAST(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) AS FLOAT))
-            AS r
-        FROM af a JOIN c2f c ON c.m = a.m AND c.cid = a.cell),
-      rsub AS (SELECT vec_id, m, list_slice(r, m * 8 + 1, m * 8 + 8) AS sub
-        FROM res, UNNEST(range(0, 8)) AS t(m)),
-      c0 AS (SELECT m, CAST(vec_id AS INT) AS cid, sub AS ce
-        FROM rsub WHERE vec_id < 16),
-      ${pqAssignSql("rsub", "c0", "a0")},
-      ${pqCentSql("a0", "c1")},
-      ${pqAssignSql("rsub", "c1", "a1")},
-      ${pqCentSql("a1", "c2")},
-      ${pqAssignSql("rsub", "c2", "codes")},
-      probes AS (SELECT qid, cell, qce, qe FROM (
-          SELECT q.vec_id AS qid, c.cid AS cell, c.ce AS qce,
-            q.embedding AS qe,
-            ROW_NUMBER() OVER (PARTITION BY q.vec_id
-              ORDER BY CAST(ROUND(${pqL2Sql("q.embedding", "c.ce")} * 1e6, 0)
-                AS BIGINT), c.cid) AS rk
-          FROM embeddings q, c2f c WHERE q.vec_id < 5) WHERE rk <= 4),
-      qr AS (SELECT qid, cell,
-          list_transform(list_zip(qe, qce),
-            p -> CAST(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) AS FLOAT))
-            AS qr
-        FROM probes),
-      qrs AS (SELECT qid, cell, m, list_slice(qr, m * 8 + 1, m * 8 + 8)
-            AS qsub
-        FROM qr, UNNEST(range(0, 8)) AS t(m)),
-      nce AS (SELECT k.vec_id AS nid, k.m, c.ce, a.cell
-        FROM codes k
-        JOIN c2 c ON c.m = k.m AND c.cid = k.cell
-        JOIN af a ON a.vec_id = k.vec_id),
-      adc AS (SELECT s.qid, n.nid,
-          CAST(SUM(CAST(ROUND(${pqL2Sql("s.qsub", "n.ce")} * 1e6, 0)
-            AS BIGINT)) AS BIGINT) AS dist_q
-        FROM qrs s JOIN nce n ON n.cell = s.cell AND n.m = s.m
-        WHERE n.nid <> s.qid GROUP BY s.qid, n.nid),
-      short AS (SELECT qid, nid FROM (
-          SELECT qid, nid,
-            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dist_q, nid) AS ark
-          FROM adc) WHERE ark <= 16),
-      ex AS (SELECT s.qid, s.nid,
-          CAST(ROUND(${pqL2Sql("q.embedding", "n.embedding")} * 1e6, 0)
-            AS BIGINT) AS dist_q
-        FROM short s
-        JOIN embeddings q ON q.vec_id = s.qid
-        JOIN embeddings n ON n.vec_id = s.nid),
-      rr AS (SELECT qid, nid, dist_q,
-          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dist_q, nid) AS rk
-        FROM ex)
-      SELECT qid, nid, dist_q, CAST(rk AS INT) AS rk
-      FROM rr WHERE rk <= 4 ORDER BY qid, rk""",
-    "x99_pq_recall" -> {
-      def l2 = pqL2Sql _
-      def assignSql(cents: String, out: String) =
-        pqAssignSql("sub", cents, out)
-      def centSql = pqCentSql _
-      s"""
-      WITH sub AS (
-        SELECT vec_id, m, list_slice(embedding, m * 8 + 1, m * 8 + 8) AS sub
-        FROM embeddings, UNNEST(range(0, 8)) AS t(m)),
-      c0 AS (SELECT m, CAST(vec_id AS INT) AS cid, sub AS ce
-        FROM sub WHERE vec_id < 16),
-      ${assignSql("c0", "a0")},
-      ${centSql("a0", "c1")},
-      ${assignSql("c1", "a1")},
-      ${centSql("a1", "c2")},
-      ${assignSql("c2", "codes")},
-      qs AS (SELECT vec_id AS qid, m, sub AS qsub FROM sub WHERE vec_id < 5),
-      nce AS (SELECT k.vec_id AS nid, k.m, c.ce
-        FROM codes k JOIN c2 c ON c.m = k.m AND c.cid = k.cell),
-      adc AS (
-        SELECT q.qid, n.nid,
-          CAST(SUM(CAST(ROUND(${l2("q.qsub", "n.ce")} * 1e6, 0) AS BIGINT))
-            AS BIGINT) AS adc_q
-        FROM qs q JOIN nce n ON n.m = q.m
-        WHERE n.nid <> q.qid GROUP BY q.qid, n.nid),
-      ex AS (
-        SELECT q.vec_id AS qid, e.vec_id AS nid,
-          CAST(ROUND(${l2("q.embedding", "e.embedding")} * 1e6, 0) AS BIGINT)
-            AS ex_q
-        FROM embeddings q, embeddings e
-        WHERE q.vec_id < 5 AND e.vec_id <> q.vec_id),
-      r AS (SELECT ex.qid, ex.nid,
-          ROW_NUMBER() OVER (PARTITION BY ex.qid
-            ORDER BY ex.ex_q, ex.nid) AS rf,
-          ROW_NUMBER() OVER (PARTITION BY ex.qid
-            ORDER BY adc.adc_q, ex.nid) AS rq
-        FROM ex JOIN adc USING (qid, nid))
-      SELECT qid,
-        CAST(SUM(CASE WHEN rf <= 10 AND rq <= 10 THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_match,
-        CAST(SUM(CASE WHEN rf <= 10 AND rq <= 10 THEN 1 ELSE 0 END)
-          AS DOUBLE) / 10 AS recall_at_10
-      FROM r GROUP BY qid ORDER BY qid"""
-    },
-    "x98_staged_dedup" -> s"""
-      $dedupClusterCtes,
-      fam AS (SELECT canonico, COUNT(*) AS fs FROM labels GROUP BY canonico)
-      SELECT l.doc_id, l.canonico, l.doc_id = l.canonico AS sobrevivente,
-        CAST(f.fs AS BIGINT) AS family_size
-      FROM labels l JOIN fam f USING (canonico)
-      ORDER BY l.doc_id""",
-    "x97_canon_decontaminate" -> """
-      WITH train AS (
-        SELECT doc_id, text FROM documents WHERE doc_id >= 50
-        UNION ALL
-        SELECT doc_id + 6000000, upper(text) || ' , .'
-        FROM documents WHERE doc_id < 50),
-      ct AS (SELECT doc_id,
-          list_filter(list_transform(
-            regexp_split_to_array(trim(text), '\s+'),
-            t -> lower(regexp_replace(t, '[^A-Za-z0-9]', '', 'g'))),
-            t -> length(t) > 0) AS toks
-        FROM train),
-      ce AS (SELECT doc_id AS eval_id,
-          list_filter(list_transform(
-            regexp_split_to_array(trim(text), '\s+'),
-            t -> lower(regexp_replace(t, '[^A-Za-z0-9]', '', 'g'))),
-            t -> length(t) > 0) AS toks
-        FROM documents WHERE doc_id < 50),
-      tg AS (SELECT doc_id, unnest(list_distinct(list_transform(
-            range(1, greatest(len(toks) - 5, 0) + 1),
-            i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' '
-              || toks[i+3] || ' ' || toks[i+4] || ' ' || toks[i+5]))) AS g
-        FROM ct),
-      eg AS (SELECT eval_id, unnest(list_distinct(list_transform(
-            range(1, greatest(len(toks) - 5, 0) + 1),
-            i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' '
-              || toks[i+3] || ' ' || toks[i+4] || ' ' || toks[i+5]))) AS g
-        FROM ce)
-      SELECT t.doc_id,
-        CAST(COUNT(DISTINCT t.g) AS BIGINT) AS n_overlap_grams,
-        CAST(COUNT(DISTINCT e.eval_id) AS BIGINT) AS n_eval_docs
-      FROM tg t JOIN eg e ON t.g = e.g
-      GROUP BY t.doc_id ORDER BY t.doc_id""",
-    "x95_temperature_sweep" -> """
-      WITH toks AS (SELECT source,
-          CAST(SUM(len(regexp_split_to_array(trim(text), '\s+'))) AS BIGINT)
-            AS tok
-        FROM documents GROUP BY source),
-      den AS (SELECT
-          list_sum(list(sqrt(sqrt(CAST(tok AS DOUBLE))) ORDER BY source))
-            AS d025,
-          list_sum(list(sqrt(CAST(tok AS DOUBLE)) ORDER BY source)) AS d05,
-          list_sum(list(sqrt(CAST(tok AS DOUBLE))
-            * sqrt(sqrt(CAST(tok AS DOUBLE))) ORDER BY source)) AS d075,
-          list_sum(list(CAST(tok AS DOUBLE) ORDER BY source)) AS d1,
-          CAST(SUM(tok) AS BIGINT) AS bt
-        FROM toks),
-      a AS (SELECT unnest([0.25, 0.5, 0.75, 1.0]) AS alpha),
-      j AS (SELECT t.source, t.tok, a.alpha,
-          CASE a.alpha
-            WHEN 0.25 THEN sqrt(sqrt(CAST(t.tok AS DOUBLE)))
-            WHEN 0.5 THEN sqrt(CAST(t.tok AS DOUBLE))
-            WHEN 0.75 THEN sqrt(CAST(t.tok AS DOUBLE))
-              * sqrt(sqrt(CAST(t.tok AS DOUBLE)))
-            ELSE CAST(t.tok AS DOUBLE) END AS w,
-          CASE a.alpha
-            WHEN 0.25 THEN d025 WHEN 0.5 THEN d05 WHEN 0.75 THEN d075
-            ELSE d1 END AS dn,
-          bt
-        FROM toks t, a, den)
-      SELECT source, tok, alpha,
-        ROUND(w / dn, 6) AS p_sample,
-        ROUND(CAST(bt AS DOUBLE) * (w / dn) / CAST(tok AS DOUBLE), 6)
-          AS epochs
-      FROM j ORDER BY source, alpha""",
-    "x96_length_histogram" -> """
-      WITH d AS (SELECT source,
-          CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT)
-            AS n_tok
-        FROM documents),
-      b AS (SELECT source, n_tok,
-          CAST(length(bin(GREATEST(n_tok, 1))) - 1 AS BIGINT) AS bucket
-        FROM d),
-      g AS (SELECT source, bucket, COUNT(*) AS n,
-          CAST(SUM(n_tok) AS BIGINT) AS tok_mass
-        FROM b GROUP BY source, bucket),
-      t AS (SELECT source, bucket, n, tok_mass,
-          SUM(n) OVER (PARTITION BY source) AS n_src FROM g)
-      SELECT source, bucket, CAST(n AS BIGINT) AS n, tok_mass,
-        CAST((2 * n * 10000 + n_src) // (2 * n_src) AS DOUBLE) / 1e4
-          AS share
-      FROM t ORDER BY source, bucket""",
-    "x93_intradoc_dedup" -> """
-      WITH corpus AS (
-        SELECT doc_id,
-          CASE WHEN doc_id % 3 = 0
-              AND len(regexp_split_to_array(trim(text), '\s+')) >= 8
-            THEN array_to_string(list_slice(
-                regexp_split_to_array(trim(text), '\s+'), 1, 8), ' ')
-              || ' ' || text
-            ELSE text END AS text
-        FROM documents),
-      t AS (SELECT doc_id,
-          regexp_split_to_array(trim(text), '\s+') AS toks FROM corpus),
-      se AS (SELECT doc_id,
-          list_transform(range(0, (len(toks) + 7) // 8), g ->
-            array_to_string(list_slice(toks, g * 8 + 1, g * 8 + 8), ' '))
-            AS segs
-        FROM t WHERE len(toks) > 0),
-      k AS (SELECT doc_id, segs,
-          list_filter(segs, (s, i) ->
-            list_position(list_transform(segs, x -> md5(x)), md5(s)) = i)
-            AS kept
-        FROM se)
-      SELECT doc_id, CAST(len(segs) AS BIGINT) AS n_seg,
-        CAST(len(segs) - len(kept) AS BIGINT) AS n_dup,
-        md5(array_to_string(kept, ' ')) AS clean_md5,
-        CASE WHEN length(array_to_string(kept, ' ')) = 0
-          THEN CAST(0 AS BIGINT)
-          ELSE CAST(len(regexp_split_to_array(
-            array_to_string(kept, ' '), '\s+')) AS BIGINT) END AS clean_n_tok
-      FROM k ORDER BY doc_id""",
-    "x87_boilerplate_strip" -> """
-      WITH t AS (SELECT doc_id,
-          regexp_split_to_array(trim('portal ' || source
-            || ' official mirror terms of service apply'
-            || ' all rights reserved contact webmaster ' || text),
-            '\s+') AS toks
-        FROM documents),
-      b AS (SELECT doc_id, toks,
-          unnest(range(0, (len(toks) + 7) // 8)) AS g FROM t),
-      seg AS (SELECT doc_id, g,
-          array_to_string(list_slice(toks, g * 8 + 1, g * 8 + 8), ' ')
-            AS segtxt
-        FROM b),
-      sf AS (SELECT doc_id, g, segtxt, md5(segtxt) AS fp FROM seg),
-      df AS (SELECT fp, COUNT(DISTINCT doc_id) AS df FROM sf GROUP BY fp),
-      agg AS (SELECT doc_id, COUNT(*) AS n_seg,
-          SUM(CASE WHEN df >= 3 THEN 1 ELSE 0 END) AS n_drop,
-          COALESCE(array_to_string(
-            list(segtxt ORDER BY g) FILTER (WHERE df < 3), ' '), '')
-            AS clean
-        FROM sf JOIN df USING (fp) GROUP BY doc_id)
-      SELECT doc_id, CAST(n_seg AS BIGINT) AS n_seg,
-        CAST(n_drop AS BIGINT) AS n_drop,
-        md5(clean) AS clean_md5,
-        CASE WHEN length(clean) = 0 THEN CAST(0 AS BIGINT)
-          ELSE CAST(len(regexp_split_to_array(clean, '\s+')) AS BIGINT) END
-          AS clean_n_tok
-      FROM agg ORDER BY doc_id""",
-    "x88_quality_survivors" -> s"""
-      $dedupClusterCtes,
-      q AS (
-        SELECT doc_id,
-          ROUND(LEAST(n_tok / 50.0, 1.0) * 0.4
-            + (1.0 - LEAST(punct_ratio * 5.0, 1.0)) * 0.3
-            + LEAST(stop_ratio * 10.0, 1.0) * 0.3, 4) AS quality
-        FROM (
-          SELECT doc_id, len(toks) AS n_tok,
-            CAST(length(text) - length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g'))
-              AS DOUBLE) / GREATEST(length(text), 1) AS punct_ratio,
-            CAST(len(list_filter(toks, t -> t IN ('the','a','of','and'))) AS DOUBLE)
-              / GREATEST(len(toks), 1) AS stop_ratio
-          FROM (SELECT doc_id, text,
-                  regexp_split_to_array(trim(text), '\\s+') AS toks
-                FROM corpus))),
-      j AS (SELECT l.doc_id, l.canonico, q.quality,
-          ROW_NUMBER() OVER (PARTITION BY l.canonico
-            ORDER BY q.quality DESC, l.doc_id) AS rk
-        FROM labels l JOIN q ON q.doc_id = l.doc_id)
-      SELECT doc_id, canonico, quality, rk = 1 AS kept_best
-      FROM j ORDER BY doc_id""",
-    "x89_lang_confusion" -> """
-      WITH c AS (SELECT doc_id, lang,
-          CAST(len(list_filter(tl, x -> x IN ('the', 'a', 'and', 'of')))
-            AS BIGINT) AS c_en,
-          CAST(len(list_filter(tl, x -> x IN ('de', 'o', 'da', 'em')))
-            AS BIGINT) AS c_pt,
-          CAST(len(list_filter(tl, x -> x IN ('der', 'die', 'das', 'und')))
-            AS BIGINT) AS c_de
-        FROM (SELECT doc_id, lang,
-            regexp_split_to_array(trim(lower(text)), '\s+') AS tl
-          FROM documents)),
-      r AS (SELECT lang,
-          CASE WHEN c_en = GREATEST(c_en, c_pt, c_de) AND c_en > 0 THEN 'en'
-               WHEN c_pt = GREATEST(c_en, c_pt, c_de) AND c_pt > 0 THEN 'pt'
-               WHEN c_de = GREATEST(c_en, c_pt, c_de) AND c_de > 0 THEN 'de'
-               ELSE 'und' END AS lang_detectada
-        FROM c),
-      g AS (SELECT lang, lang_detectada, COUNT(*) AS n FROM r GROUP BY 1, 2),
-      tot AS (SELECT lang, lang_detectada, n,
-          SUM(n) OVER (PARTITION BY lang) AS n_lang FROM g)
-      SELECT lang, lang_detectada, CAST(n AS BIGINT) AS n,
-        CAST((2 * n * 10000 + n_lang) // (2 * n_lang) AS DOUBLE) / 1e4
-          AS share
-      FROM tot ORDER BY lang, lang_detectada""",
-    "x86_domain_cap" -> """
-      WITH d AS (
-        SELECT source, doc_id,
-          CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tok
-        FROM documents),
-      r AS (
-        SELECT source, doc_id, n_tok,
-          CAST(ROW_NUMBER() OVER (PARTITION BY source
-            ORDER BY n_tok DESC, doc_id) AS BIGINT) AS rk,
-          CAST(COUNT(*) OVER (PARTITION BY source) AS BIGINT) AS n_domain
-        FROM d)
-      SELECT source, doc_id, n_tok, rk, rk <= 15 AS kept, n_domain,
-        least(n_domain, 15) AS n_kept
-      FROM r ORDER BY source, rk""",
-    "x62b_lsh_tuner" -> {
-      // one SELECT per grid config; each rebuilds the S-curve points
-      // from the exact decimal rendering of the Scala-side doubles
-      // (round-trip exact) with the identical left-assoc product
-      // chain, so FLOOR lands on bit-identical values
-      def missStr(r: Int, t: Double): String = {
-        var tp = 1.0; var i = 0
-        while (i < r) { tp *= t; i += 1 }
-        new java.math.BigDecimal(1.0 - tp).toPlainString
-      }
-      def chain(name: String, b: Int) = Seq.fill(b)(name).mkString(" * ")
-      val branches = lshTunerGrid.map { case (b, r) =>
-        s"""SELECT CAST(${b * r} AS BIGINT) AS num_hashes,
-          CAST($b AS BIGINT) AS bands, CAST($r AS BIGINT) AS rows_per_band,
-          FLOOR((1.0 - ${chain("mhi", b)}) * 1e4) / 1e4 AS recall_hi,
-          FLOOR((1.0 - ${chain("mlo", b)}) * 1e4) / 1e4 AS catch_lo,
-          CAST(${b * r + b} AS BIGINT) AS cost
-        FROM (SELECT CAST(${missStr(r, 0.5)} AS DOUBLE) AS mhi,
-          CAST(${missStr(r, 0.3)} AS DOUBLE) AS mlo)"""
-      }.mkString("\n UNION ALL ")
-      s"""
-      WITH grid AS ($branches),
-      rk AS (SELECT *, recall_hi >= 0.9 AS ok,
-          ROW_NUMBER() OVER (PARTITION BY recall_hi >= 0.9
-            ORDER BY catch_lo, cost, rows_per_band, bands) AS rn
-        FROM grid)
-      SELECT num_hashes, bands, rows_per_band, recall_hi, catch_lo, cost,
-        (ok AND rn = 1) AS chosen
-      FROM rk ORDER BY rows_per_band, bands"""
-    },
-    "x84_perceptual_hash" -> s"""
-      SELECT doc_id, dhash FROM $dhashSql ORDER BY doc_id""",
-    "x92_dhash_store" -> s"""
-      WITH sigs AS (SELECT * FROM $dhashSql),
-      store AS (SELECT doc_id, dhash FROM sigs WHERE doc_id < 1000000),
-      batch AS (SELECT doc_id, dhash FROM sigs WHERE doc_id >= 1000000)
-      SELECT b.doc_id AS new_id, s.doc_id AS old_id,
-        CAST(bit_count(xor(b.dhash, s.dhash)) AS INT) AS hamming
-      FROM batch b JOIN store s
-        ON bit_count(xor(b.dhash, s.dhash)) <= 3
-      ORDER BY new_id, old_id""",
-    "x85_dhash_neardup" -> s"""
-      WITH sigs AS (SELECT * FROM $dhashSql)
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        CAST(bit_count(xor(a.dhash, b.dhash)) AS INT) AS hamming
-      FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.dhash, b.dhash)) <= 3
-      ORDER BY id_a, id_b""",
-    "x23_simhash64_dedup" -> s"""
-      WITH sigs AS (SELECT * FROM $simhash64Sql)
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-      FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-      ORDER BY id_a, id_b""",
-    "x19_gopher_repetition" -> """
-      WITH tk AS (SELECT doc_id,
-          regexp_split_to_array(trim(text), '\s+') AS toks FROM documents),
-      grams AS (SELECT doc_id,
-          unnest(list_transform(range(1, greatest(len(toks) - 1, 0) + 1),
-            i -> toks[i] || ' ' || toks[i+1])) AS g FROM tk),
-      counts AS (SELECT doc_id, g, COUNT(*) AS c FROM grams GROUP BY doc_id, g)
-      SELECT doc_id,
-        CAST(SUM(c) AS BIGINT) AS total_2grams,
-        CAST(MAX(c) AS BIGINT) AS top_2gram_n,
-        CAST(MAX(c) AS DOUBLE) / CAST(SUM(c) AS BIGINT) AS rep_ratio,
-        (CAST(MAX(c) AS DOUBLE) / CAST(SUM(c) AS BIGINT)) > 0.05 AS repetitive
-      FROM counts GROUP BY doc_id ORDER BY doc_id""",
-    "x20_decontaminate" -> s"""
-      WITH tk AS (SELECT doc_id,
-          regexp_split_to_array(trim(text), '\\s+') AS toks FROM documents),
-      g AS (SELECT doc_id, unnest($sqlShingles3) AS g FROM tk)
-      SELECT t.doc_id,
-        CAST(COUNT(DISTINCT t.g) AS BIGINT) AS n_overlap_grams,
-        CAST(COUNT(DISTINCT e.doc_id) AS BIGINT) AS n_eval_docs
-      FROM g t JOIN g e ON t.g = e.g AND e.doc_id < 50
-      WHERE t.doc_id >= 50
-      GROUP BY t.doc_id ORDER BY t.doc_id""",
-    "x21_curation_funnel" -> s"""
-      WITH corpus AS (SELECT doc_id, text FROM $corpusSql),
-      wl AS (SELECT c.doc_id, c.text, d.lang
-             FROM corpus c JOIN documents d ON c.doc_id % 1000000 = d.doc_id),
-      s1 AS (SELECT * FROM wl WHERE lang = 'en'),
-      qual AS (SELECT doc_id, text, ROUND(
-          LEAST(len(toks) / 50.0, 1.0) * 0.4
-          + (1.0 - LEAST(CAST(length(text) - length(
-                regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)
-              / GREATEST(length(text), 1) * 5.0, 1.0)) * 0.3
-          + LEAST(CAST(len(list_filter(toks, t -> t IN ('the','a','of','and')))
-              AS DOUBLE) / GREATEST(len(toks), 1) * 10.0, 1.0) * 0.3, 4) AS q
-        FROM (SELECT doc_id, text,
-                regexp_split_to_array(trim(text), '\\s+') AS toks FROM s1)),
-      s2 AS (SELECT * FROM qual WHERE q >= 0.5),
-      s3 AS (SELECT md5(lower(trim(text))) AS fp, MIN(doc_id) AS doc_id
-             FROM s2 GROUP BY 1),
-      s4 AS (SELECT doc_id FROM s3
-             ORDER BY md5(CAST(doc_id AS VARCHAR)) LIMIT 5)
-      SELECT 1 AS ordem, 'bruto' AS etapa,
-        CAST((SELECT COUNT(*) FROM corpus) AS BIGINT) AS linhas
-      UNION ALL SELECT 2, 'idioma', (SELECT COUNT(*) FROM s1)
-      UNION ALL SELECT 3, 'qualidade', (SELECT COUNT(*) FROM s2)
-      UNION ALL SELECT 4, 'dedup_exato', (SELECT COUNT(*) FROM s3)
-      UNION ALL SELECT 5, 'amostra', (SELECT COUNT(*) FROM s4)
-      ORDER BY ordem""",
-    "x44_vocab_coverage" -> """
-      WITH tok AS (
-        SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS token
-        FROM documents),
-      cnt AS (SELECT token, COUNT(*) AS c FROM tok GROUP BY token),
-      hist AS (SELECT c, COUNT(*) AS n, c * COUNT(*) AS tok_mass
-        FROM cnt GROUP BY c),
-      cum AS (SELECT c, n, tok_mass,
-          SUM(n) OVER (ORDER BY c DESC
-            RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_after,
-          SUM(n) OVER (ORDER BY c DESC
-            RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n AS cum_prev
-        FROM hist),
-      tot AS (SELECT CAST(SUM(tok_mass) AS BIGINT) AS total_tok,
-        CAST(SUM(n) AS BIGINT) AS total_vocab FROM hist),
-      ks AS (SELECT * FROM (VALUES (100), (1000), (10000)) t(k))
-      SELECT k,
-        LEAST(CAST(k AS BIGINT), (SELECT total_vocab FROM tot)) AS vocab_k,
-        CAST(SUM(CASE WHEN cum_after <= k THEN tok_mass
-          ELSE (k - cum_prev) * c END) AS BIGINT) AS covered_tok,
-        CAST((2 * abs(CAST(SUM(CASE WHEN cum_after <= k THEN tok_mass
-              ELSE (k - cum_prev) * c END) AS BIGINT) * 10000)
-            + (SELECT total_tok FROM tot))
-          // (2 * (SELECT total_tok FROM tot)) AS DOUBLE) / 1e4 AS coverage
-      FROM ks JOIN cum ON cum_prev < k
-      GROUP BY k
-      ORDER BY k""",
-    "x52_ngram_novelty" -> """
-      WITH docs AS (
-        SELECT doc_id, list_distinct(list_transform(
-            range(1, greatest(len(toks) - 2, 0) + 1),
-            i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shs
-        FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-              FROM documents)),
-      sh AS (SELECT doc_id, unnest(shs) AS sh FROM docs),
-      per_doc AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams
-        FROM sh GROUP BY doc_id),
-      uniq AS (SELECT owner, CAST(COUNT(*) AS BIGINT) AS n_unique
-        FROM (SELECT sh, COUNT(*) AS df, MIN(doc_id) AS owner
-              FROM sh GROUP BY sh)
-        WHERE df = 1 GROUP BY owner)
-      SELECT p.doc_id, p.n_grams,
-        COALESCE(u.n_unique, 0) AS n_unique,
-        CAST((2 * abs(COALESCE(u.n_unique, 0) * 10000) + p.n_grams)
-          // (2 * p.n_grams) AS DOUBLE) / 1e4 AS novelty,
-        CAST((2 * abs(COALESCE(u.n_unique, 0) * 10000) + p.n_grams)
-          // (2 * p.n_grams) AS DOUBLE) / 1e4 < 0.2 AS templated
-      FROM per_doc p LEFT JOIN uniq u ON u.owner = p.doc_id
-      ORDER BY p.doc_id""",
-    "x50_mixture_weights" -> """
-      WITH toks AS (SELECT source,
-          CAST(SUM(len(regexp_split_to_array(trim(text), '\s+'))) AS BIGINT) AS tok
-        FROM documents GROUP BY source),
-      den AS (SELECT list_sum(list(sqrt(CAST(tok AS DOUBLE)) ORDER BY source)) AS dn,
-          CAST(SUM(tok) AS BIGINT) AS bt FROM toks)
-      SELECT source, tok,
-        ROUND(sqrt(CAST(tok AS DOUBLE)) / dn, 6) AS p_sample,
-        ROUND(CAST(bt AS DOUBLE) * (sqrt(CAST(tok AS DOUBLE)) / dn)
-          / CAST(tok AS DOUBLE), 6) AS epochs
-      FROM toks CROSS JOIN den ORDER BY source""",
-    "x51_embed_standardize" -> """
-      WITH d1 AS (SELECT vec_id,
-          unnest(range(0, len(embedding))) AS i,
-          unnest(embedding) AS xi
-        FROM embeddings),
-      q1 AS (SELECT vec_id, i,
-          CAST(ROUND(CAST(xi AS DOUBLE) * 1e6, 0) AS BIGINT) AS qi FROM d1),
-      nn AS (SELECT COUNT(*) AS n FROM embeddings),
-      diag AS (SELECT i, CAST(SUM(qi) AS BIGINT) AS s_,
-          nn.n * CAST(SUM(qi * qi) AS BIGINT)
-            - CAST(SUM(qi) AS BIGINT) * CAST(SUM(qi) AS BIGINT) AS v_
-        FROM q1 CROSS JOIN nn GROUP BY i, nn.n)
-      SELECT q1.vec_id, q1.i,
-        ROUND(CAST(nn.n * qi - dg.s_ AS DOUBLE)
-          / sqrt(CAST(NULLIF(dg.v_, 0) AS DOUBLE)), 6) AS z
-      FROM q1 JOIN diag dg ON dg.i = q1.i CROSS JOIN nn
-      ORDER BY q1.vec_id, q1.i""",
-    "x65_embed_whiten" -> """
-      WITH RECURSIVE d1 AS (SELECT vec_id, embedding,
-          unnest(range(0, len(embedding))) AS i,
-          unnest(embedding) AS xi
-        FROM embeddings),
-      q1 AS (SELECT vec_id, embedding, i,
-          CAST(ROUND(CAST(xi AS DOUBLE) * 1e6, 0) AS BIGINT) AS qi FROM d1),
-      d2 AS (SELECT i, qi,
-          unnest(range(0, len(embedding))) AS j,
-          unnest(embedding) AS xj
-        FROM q1),
-      p2 AS (SELECT i, j, qi,
-          CAST(ROUND(CAST(xj AS DOUBLE) * 1e6, 0) AS BIGINT) AS qj
-        FROM d2 WHERE j >= i),
-      cells AS MATERIALIZED (SELECT i, j, CAST(SUM(qi * qj) AS BIGINT) AS p,
-          CAST(SUM(CASE WHEN j = i THEN qi END) AS BIGINT) AS s_diag
-        FROM p2 GROUP BY i, j),
-      nn AS (SELECT COUNT(*) AS n FROM embeddings),
-      sums AS (SELECT i AS d_, s_diag AS s_ FROM cells WHERE j = i),
-      covq AS (SELECT cells.i, cells.j,
-          CAST((CASE WHEN nn.n * p - si.s_ * sj.s_ < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(nn.n * p - si.s_ * sj.s_) + nn.n * nn.n * 10000)
-              // (2 * (nn.n * nn.n * 10000))) AS DOUBLE) / 1e8 AS cov
-        FROM cells
-        JOIN sums si ON si.d_ = cells.i
-        JOIN sums sj ON sj.d_ = cells.j
-        CROSS JOIN nn),
-      full_m AS (SELECT i, j, cov FROM covq
-        UNION ALL SELECT j AS i, i AS j, cov FROM covq WHERE i < j),
-      rows_m AS (SELECT i, list(cov ORDER BY j) AS r FROM full_m GROUP BY i),
-      mat AS MATERIALIZED (SELECT list(r ORDER BY i) AS m FROM rows_m),
-      svt AS MATERIALIZED (SELECT list(s_ ORDER BY d_) AS sv FROM sums),
-      it1(k, v) AS (
-        SELECT 0, list_transform(m[1], x -> CAST(1.0 AS DOUBLE)) FROM mat
-        UNION ALL
-        SELECT k + 1,
-          list_transform(w, x ->
-            x / list_max(list_transform(w, y -> abs(y))))
-        FROM (SELECT k,
-            list_transform(range(1, len(m) + 1), i ->
-              list_sum(list_transform(list_zip(m[i], v), p -> p[1] * p[2]))) AS w
-          FROM it1, mat WHERE k < 50)),
-      uvec1 AS MATERIALIZED (SELECT list_transform(v, x ->
-          x / sqrt(list_sum(list_transform(v, y -> y * y)))) AS u
-        FROM it1 WHERE k = 50),
-      lamt1 AS MATERIALIZED (SELECT
-          list_sum(list_transform(list_zip(u, w), p -> p[1] * p[2])) AS lam
-        FROM (SELECT u,
-            list_transform(range(1, len(m) + 1), i ->
-              list_sum(list_transform(list_zip(m[i], u), p -> p[1] * p[2]))) AS w
-          FROM uvec1, mat)),
-      mat2 AS MATERIALIZED (SELECT list_transform(range(1, len(m) + 1), i ->
-            list_transform(range(1, len(m) + 1), j ->
-              m[i][j] - lam * u[i] * u[j])) AS m
-        FROM mat, uvec1, lamt1),
-      it2(k, v) AS (
-        SELECT 0, list_transform(m[1], x -> CAST(1.0 AS DOUBLE)) FROM mat2
-        UNION ALL
-        SELECT k + 1,
-          list_transform(w, x ->
-            x / list_max(list_transform(w, y -> abs(y))))
-        FROM (SELECT k,
-            list_transform(range(1, len(m) + 1), i ->
-              list_sum(list_transform(list_zip(m[i], v), p -> p[1] * p[2]))) AS w
-          FROM it2, mat2 WHERE k < 50)),
-      uvec2 AS MATERIALIZED (SELECT list_transform(v, x ->
-          x / sqrt(list_sum(list_transform(v, y -> y * y)))) AS u
-        FROM it2 WHERE k = 50),
-      lamt2 AS MATERIALIZED (SELECT
-          list_sum(list_transform(list_zip(u, w), p -> p[1] * p[2])) AS lam
-        FROM (SELECT u,
-            list_transform(range(1, len(m) + 1), i ->
-              list_sum(list_transform(list_zip(m[i], u), p -> p[1] * p[2]))) AS w
-          FROM uvec2, mat2)),
-      md AS MATERIALIZED (SELECT
-          list_sum(list_transform(list_zip(svt.sv, uvec1.u),
-            p -> CAST(p[1] AS DOUBLE) * p[2])) / (CAST(nn.n AS DOUBLE) * 1e6) AS md1,
-          list_sum(list_transform(list_zip(svt.sv, uvec2.u),
-            p -> CAST(p[1] AS DOUBLE) * p[2])) / (CAST(nn.n AS DOUBLE) * 1e6) AS md2
-        FROM svt, uvec1, uvec2, nn)
-      SELECT e.vec_id,
-        CASE WHEN l1.lam > 0 THEN
-          ROUND((list_sum(list_transform(list_zip(e.embedding, uvec1.u),
-            p -> CAST(p[1] AS DOUBLE) * p[2])) - md.md1) / sqrt(l1.lam), 6)
-        END AS w1,
-        CASE WHEN l2.lam > 0 THEN
-          ROUND((list_sum(list_transform(list_zip(e.embedding, uvec2.u),
-            p -> CAST(p[1] AS DOUBLE) * p[2])) - md.md2) / sqrt(l2.lam), 6)
-        END AS w2
-      FROM embeddings e, uvec1, uvec2, lamt1 l1, lamt2 l2, md
-      ORDER BY e.vec_id""",
-    "x49_pca_project" -> """
-      WITH RECURSIVE d1 AS (SELECT vec_id, embedding,
-          unnest(range(0, len(embedding))) AS i,
-          unnest(embedding) AS xi
-        FROM embeddings),
-      q1 AS (SELECT vec_id, embedding, i,
-          CAST(ROUND(CAST(xi AS DOUBLE) * 1e6, 0) AS BIGINT) AS qi FROM d1),
-      d2 AS (SELECT i, qi,
-          unnest(range(0, len(embedding))) AS j,
-          unnest(embedding) AS xj
-        FROM q1),
-      p2 AS (SELECT i, j, qi,
-          CAST(ROUND(CAST(xj AS DOUBLE) * 1e6, 0) AS BIGINT) AS qj
-        FROM d2 WHERE j >= i),
-      cells AS (SELECT i, j, CAST(SUM(qi * qj) AS BIGINT) AS p,
-          CAST(SUM(CASE WHEN j = i THEN qi END) AS BIGINT) AS s_diag
-        FROM p2 GROUP BY i, j),
-      nn AS (SELECT COUNT(*) AS n FROM embeddings),
-      sums AS (SELECT i AS d_, s_diag AS s_ FROM cells WHERE j = i),
-      covq AS (SELECT cells.i, cells.j,
-          CAST((CASE WHEN nn.n * p - si.s_ * sj.s_ < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(nn.n * p - si.s_ * sj.s_) + nn.n * nn.n * 10000)
-              // (2 * (nn.n * nn.n * 10000))) AS DOUBLE) / 1e8 AS cov
-        FROM cells
-        JOIN sums si ON si.d_ = cells.i
-        JOIN sums sj ON sj.d_ = cells.j
-        CROSS JOIN nn),
-      full_m AS (SELECT i, j, cov FROM covq
-        UNION ALL SELECT j AS i, i AS j, cov FROM covq WHERE i < j),
-      rows_m AS (SELECT i, list(cov ORDER BY j) AS r FROM full_m GROUP BY i),
-      mat AS MATERIALIZED (SELECT list(r ORDER BY i) AS m FROM rows_m),
-      it(k, v) AS (
-        -- CAST: a bare 1.0 literal is DECIMAL in DuckDB and would
-        -- run the whole iteration in decimal arithmetic
-        SELECT 0, list_transform(m[1], x -> CAST(1.0 AS DOUBLE)) FROM mat
-        UNION ALL
-        SELECT k + 1,
-          list_transform(w, x ->
-            x / list_max(list_transform(w, y -> abs(y))))
-        FROM (SELECT k,
-            list_transform(range(1, len(m) + 1), i ->
-              list_sum(list_transform(list_zip(m[i], v), p -> p[1] * p[2]))) AS w
-          FROM it, mat WHERE k < 50)),
-      fin AS (SELECT v FROM it WHERE k = 50),
-      uvec AS (SELECT list_transform(v, x ->
-          x / sqrt(list_sum(list_transform(v, y -> y * y)))) AS u FROM fin)
-      SELECT e.vec_id,
-        ROUND(list_sum(list_transform(list_zip(e.embedding, u.u),
-          p -> CAST(p[1] AS DOUBLE) * p[2])), 6) AS pc1_score
-      FROM embeddings e, uvec u
-      ORDER BY e.vec_id""",
-    "x48_embed_correlation" -> """
-      WITH d1 AS (SELECT vec_id, embedding,
-          unnest(range(0, len(embedding))) AS i,
-          unnest(embedding) AS xi
-        FROM embeddings),
-      q1 AS (SELECT vec_id, embedding, i,
-          CAST(ROUND(CAST(xi AS DOUBLE) * 1e6, 0) AS BIGINT) AS qi FROM d1),
-      nn AS (SELECT COUNT(*) AS n FROM embeddings),
-      diag AS (SELECT i, CAST(SUM(qi) AS BIGINT) AS s_,
-          nn.n * CAST(SUM(qi * qi) AS BIGINT)
-            - CAST(SUM(qi) AS BIGINT) * CAST(SUM(qi) AS BIGINT) AS v_
-        FROM q1 CROSS JOIN nn GROUP BY i, nn.n),
-      d2 AS (SELECT i, qi,
-          unnest(range(0, len(embedding))) AS j,
-          unnest(embedding) AS xj
-        FROM q1),
-      p2 AS (SELECT i, j, qi,
-          CAST(ROUND(CAST(xj AS DOUBLE) * 1e6, 0) AS BIGINT) AS qj
-        FROM d2 WHERE j >= i),
-      cells AS (SELECT i, j, CAST(SUM(qi * qj) AS BIGINT) AS p
-        FROM p2 GROUP BY i, j)
-      SELECT cells.i, cells.j,
-        ROUND(CAST(nn.n * p - di.s_ * dj.s_ AS DOUBLE)
-          / sqrt(CAST(NULLIF(di.v_, 0) AS DOUBLE)
-            * CAST(NULLIF(dj.v_, 0) AS DOUBLE)), 6) AS corr
-      FROM cells
-      JOIN diag di ON di.i = cells.i
-      JOIN diag dj ON dj.i = cells.j
-      CROSS JOIN nn
-      ORDER BY cells.i, cells.j""",
-    "x47_source_overlap" -> {
-      val params = graft.dedup.NearDup.minhashParams(16).zipWithIndex
-        .map { case ((a, b), j) => s"($j, ${a}::BIGINT, ${b}::BIGINT)" }
-        .mkString(", ")
-      s"""
-      WITH docs AS (
-        SELECT source, $sqlShingles3 AS shs
-        FROM (SELECT source, regexp_split_to_array(trim(text), '\\s+') AS toks
-              FROM documents)),
-      sh AS (SELECT source, unnest(shs) AS sh FROM docs WHERE len(shs) > 0),
-      hs AS (SELECT source, ${md5Hash32Sql("sh")} AS h FROM sh),
-      minh AS (
-        SELECT source, params.j,
-          MIN((h * params.a + params.b) % ${graft.dedup.NearDup.minhashPrime}) AS mh
-        FROM hs, (VALUES $params) AS params(j, a, b)
-        GROUP BY source, params.j),
-      pairs AS (
-        SELECT a.source AS source_a, b.source AS source_b,
-          CAST(SUM(CASE WHEN a.mh = b.mh THEN 1 ELSE 0 END) AS BIGINT) AS matching_slots
-        FROM minh a JOIN minh b ON a.j = b.j AND a.source < b.source
-        GROUP BY 1, 2)
-      SELECT source_a, source_b, matching_slots,
-        CAST(matching_slots AS DOUBLE) / 16.0 AS est_jaccard
-      FROM pairs ORDER BY source_a, source_b"""
-    },
-    "x46_embed_covariance" -> """
-      WITH d1 AS (SELECT vec_id, embedding,
-          unnest(range(0, len(embedding))) AS i,
-          unnest(embedding) AS xi
-        FROM embeddings),
-      q1 AS (SELECT vec_id, embedding, i,
-          CAST(ROUND(CAST(xi AS DOUBLE) * 1e6, 0) AS BIGINT) AS qi FROM d1),
-      d2 AS (SELECT i, qi,
-          unnest(range(0, len(embedding))) AS j,
-          unnest(embedding) AS xj
-        FROM q1),
-      p2 AS (SELECT i, j, qi,
-          CAST(ROUND(CAST(xj AS DOUBLE) * 1e6, 0) AS BIGINT) AS qj
-        FROM d2 WHERE j >= i),
-      cells AS (SELECT i, j, CAST(SUM(qi * qj) AS BIGINT) AS p,
-          CAST(SUM(CASE WHEN j = i THEN qi END) AS BIGINT) AS s_diag
-        FROM p2 GROUP BY i, j),
-      nn AS (SELECT COUNT(*) AS n FROM embeddings),
-      sums AS (SELECT i AS d_, s_diag AS s_ FROM cells WHERE j = i)
-      SELECT cells.i, cells.j,
-        CAST((CASE WHEN nn.n * p - si.s_ * sj.s_ < 0 THEN -1 ELSE 1 END)
-          * ((2 * abs(nn.n * p - si.s_ * sj.s_) + nn.n * nn.n * 10000)
-            // (2 * (nn.n * nn.n * 10000))) AS DOUBLE) / 1e8 AS cov
-      FROM cells
-      JOIN sums si ON si.d_ = cells.i
-      JOIN sums sj ON sj.d_ = cells.j
-      CROSS JOIN nn
-      ORDER BY cells.i, cells.j""",
-    "x45_cluster_diversity" -> """
-      WITH q AS (
-        SELECT label,
-          unnest(range(1, len(embedding) + 1)) AS dim,
-          unnest(embedding) AS x
-        FROM embeddings),
-      qq AS (SELECT label, dim,
-          CAST(ROUND(CAST(x AS DOUBLE) * 1e6, 0) AS BIGINT) AS q FROM q),
-      per_dim AS (SELECT label, dim, COUNT(*) AS n,
-          SUM(q) AS s, SUM(q * q) AS ss
-        FROM qq GROUP BY label, dim),
-      agg AS (SELECT label, MAX(n) AS n_vecs,
-          SUM(n * ss - s * s) AS m2
-        FROM per_dim GROUP BY label)
-      SELECT label, n_vecs,
-        CAST((2 * abs(m2 * 2) + n_vecs * n_vecs * 1000000)
-          // (2 * (n_vecs * n_vecs * 1000000)) AS DOUBLE) / 1e6
-          AS mean_pair_sqdist
-      FROM agg
-      ORDER BY label""",
-    "x42_dsir_weights" -> """
-      WITH tok AS (
-        SELECT doc_id, lang, unnest(regexp_split_to_array(trim(text), '\s+')) AS token
-        FROM documents),
-      raw AS (SELECT token, COUNT(*) AS c_r FROM tok GROUP BY token),
-      tgt AS (SELECT token, COUNT(*) AS c_t FROM tok WHERE lang = 'en' GROUP BY token),
-      tots AS (SELECT (SELECT SUM(c_r) FROM raw) AS n_r,
-                      (SELECT COUNT(*) FROM raw) AS v,
-                      (SELECT SUM(c_t) FROM tgt) AS n_t),
-      vocab AS (SELECT token,
-          CAST(ROUND(LN(CAST((COALESCE(c_t, 0) + 1) * (n_r + v) AS DOUBLE)
-              / ((c_r + 1) * (n_t + v))) * 1e4, 0) AS BIGINT) AS lp_q
-        FROM raw LEFT JOIN tgt USING (token) CROSS JOIN tots),
-      agg AS (SELECT doc_id,
-          CAST(COUNT(*) AS BIGINT) AS n_tok,
-          CAST(SUM(lp_q) AS BIGINT) AS s_lp
-        FROM tok JOIN vocab USING (token)
-        GROUP BY doc_id)
-      SELECT doc_id, n_tok,
-        CAST((CASE WHEN s_lp < 0 THEN -1 ELSE 1 END)
-          * ((2 * abs(s_lp) + n_tok) // (2 * n_tok)) AS DOUBLE) / 1e4
-          AS dsir_weight
-      FROM agg
-      ORDER BY doc_id""",
-    "x43_embed_quantize" -> """
-      WITH v AS (SELECT vec_id,
-          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        FROM embeddings),
-      m AS (SELECT vec_id, v,
-          list_max(list_transform(v, x -> abs(x))) AS mx FROM v),
-      q AS (SELECT vec_id, v, mx,
-          list_transform(v, x -> CAST(ROUND(x * 127 / mx, 0) AS INTEGER)) AS q
-        FROM m WHERE mx > 0)
-      SELECT vec_id,
-        ROUND(mx, 6) AS q_scale_x127,
-        CAST(list_sum(q) AS BIGINT) AS q_checksum,
-        ROUND(list_max(list_transform(list_zip(v, q),
-          p -> abs(p[1] - CAST(p[2] AS DOUBLE) * mx / 127))), 6) AS max_abs_err
-      FROM q
-      ORDER BY vec_id""",
-    "x41_gopher_dup_ngrams" -> """
-      WITH tk AS (SELECT doc_id,
-          regexp_split_to_array(trim(text), '\s+') AS toks FROM documents),
-      grams AS (SELECT doc_id,
-          unnest(list_transform(range(1, greatest(len(toks) - 2, 0) + 1),
-            i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS g FROM tk),
-      counts AS (SELECT doc_id, g, COUNT(*) AS c FROM grams GROUP BY doc_id, g)
-      SELECT doc_id,
-        CAST(SUM(c) AS BIGINT) AS total_3grams,
-        CAST(SUM(CASE WHEN c >= 2 THEN c ELSE 0 END) AS BIGINT) AS dup_3gram_n,
-        CAST(SUM(CASE WHEN c >= 2 THEN c ELSE 0 END) AS DOUBLE)
-          / CAST(SUM(c) AS BIGINT) AS dup_ratio,
-        (CAST(SUM(CASE WHEN c >= 2 THEN c ELSE 0 END) AS DOUBLE)
-          / CAST(SUM(c) AS BIGINT)) > 0.3 AS repetitive
-      FROM counts GROUP BY doc_id ORDER BY doc_id""",
-    "x40_bigram_logppl" -> """
-      WITH tk AS (SELECT doc_id,
-          regexp_split_to_array(trim(text), '\s+') AS toks FROM documents),
-      uni AS (SELECT w1, COUNT(*) AS c1
-              FROM (SELECT unnest(toks) AS w1 FROM tk) GROUP BY w1),
-      bi AS (SELECT doc_id, g, split_part(g, ' ', 1) AS w1
-             FROM (SELECT doc_id,
-                 unnest(list_transform(range(1, greatest(len(toks) - 1, 0) + 1),
-                   i -> toks[i] || ' ' || toks[i+1])) AS g FROM tk)),
-      cnt2 AS (SELECT g, COUNT(*) AS c2 FROM bi GROUP BY g),
-      agg AS (SELECT doc_id,
-          CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-          CAST(SUM(CAST(ROUND(-LN(CAST(c2 AS DOUBLE) / c1) * 1e4, 0)
-            AS BIGINT)) AS BIGINT) AS s_lp
-        FROM bi JOIN cnt2 USING (g) JOIN uni USING (w1)
-        GROUP BY doc_id)
-      SELECT doc_id, n_bigrams,
-        CAST((CASE WHEN s_lp < 0 THEN -1 ELSE 1 END)
-          * ((2 * abs(s_lp) + n_bigrams) // (2 * n_bigrams)) AS DOUBLE) / 1e4
-          AS ppl2_proxy
-      FROM agg
-      ORDER BY doc_id""",
-    "x39_unigram_logppl" -> """
-      WITH tok AS (
-        SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS token
-        FROM documents),
-      cnt AS (SELECT token, COUNT(*) AS c FROM tok GROUP BY token),
-      tot AS (SELECT COUNT(*) AS n FROM tok),
-      agg AS (SELECT doc_id,
-          CAST(COUNT(*) AS BIGINT) AS n_tok,
-          CAST(SUM(CAST(ROUND(-LN(CAST(c AS DOUBLE) / n) * 1e4, 0) AS BIGINT))
-            AS BIGINT) AS s_lp
-        FROM tok JOIN cnt USING (token) CROSS JOIN tot
-        GROUP BY doc_id)
-      SELECT doc_id, n_tok,
-        CAST((CASE WHEN s_lp < 0 THEN -1 ELSE 1 END)
-          * ((2 * abs(s_lp) + n_tok) // (2 * n_tok)) AS DOUBLE) / 1e4
-          AS ppl_proxy
-      FROM agg
-      ORDER BY doc_id""",
-    "x38_length_histogram" -> """
-      SELECT source, CAST(length(bin(n_tok)) - 1 AS INT) AS balde,
-        CAST(COUNT(*) AS BIGINT) AS n_docs,
-        CAST(SUM(n_tok) AS BIGINT) AS n_tokens
-      FROM (SELECT source,
-              CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT)
-                AS n_tok
-            FROM documents)
-      GROUP BY source, balde
-      ORDER BY source, balde""",
-    "x37_funnel_by_source" -> s"""
-      WITH corpus AS (SELECT doc_id, text FROM $corpusSql),
-      wl AS (SELECT c.doc_id, c.text, d.lang, d.source
-             FROM corpus c JOIN documents d ON c.doc_id % 1000000 = d.doc_id),
-      qual AS (SELECT doc_id, source, lang, text, ROUND(
-          LEAST(len(toks) / 50.0, 1.0) * 0.4
-          + (1.0 - LEAST(CAST(length(text) - length(
-                regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)
-              / GREATEST(length(text), 1) * 5.0, 1.0)) * 0.3
-          + LEAST(CAST(len(list_filter(toks, t -> t IN ('the','a','of','and')))
-              AS DOUBLE) / GREATEST(len(toks), 1) * 10.0, 1.0) * 0.3, 4) AS q
-        FROM (SELECT doc_id, source, lang, text,
-                regexp_split_to_array(trim(text), '\\s+') AS toks FROM wl))
-      SELECT source,
-        CAST(COUNT(*) AS BIGINT) AS bruto,
-        CAST(COUNT(CASE WHEN lang = 'en' THEN 1 END) AS BIGINT) AS idioma,
-        CAST(COUNT(CASE WHEN lang = 'en' AND q >= 0.5 THEN 1 END) AS BIGINT)
-          AS qualidade,
-        CAST(COUNT(DISTINCT CASE WHEN lang = 'en' AND q >= 0.5
-          THEN md5(lower(trim(text))) END) AS BIGINT) AS dedup_exato
-      FROM qual GROUP BY source ORDER BY source""",
-    "x22_incremental_dedup" -> incrementalDedupSql,
-    // x29 is the Bloom-prefiltered physical strategy for the SAME
-    // logical result — no false negatives + exact verify of positives
-    // means the output is bit-identical to x22's (EngineSpec asserts
-    // the DataFrame equality; the shared oracle proves it vs DuckDB).
-    "x29_bloom_dedup" -> incrementalDedupSql,
-    "x30_tfidf_topk" -> """
-      WITH tk AS (
-        SELECT doc_id,
-          unnest(regexp_split_to_array(trim(text), '\s+')) AS token
-        FROM documents),
-      tf AS (SELECT doc_id, token, CAST(COUNT(*) AS BIGINT) AS tf
-             FROM tk GROUP BY doc_id, token),
-      df AS (SELECT token, CAST(COUNT(*) AS BIGINT) AS df
-             FROM tf GROUP BY token),
-      n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents),
-      scored AS (
-        SELECT t.doc_id, t.token, t.tf, d.df,
-          ROUND(t.tf * ln((n.n + 1.0) / (d.df + 1.0)), 4) AS score
-        FROM tf t JOIN df d USING (token), n),
-      ranked AS (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
-          ORDER BY score DESC, token) AS rk
-        FROM scored)
-      SELECT doc_id, token, tf, df, score, CAST(rk AS INT) AS rk
-      FROM ranked WHERE rk <= 3
-      ORDER BY doc_id, rk""",
-    "x2_dedup_minhash" -> {
-      val params = graft.dedup.NearDup.minhashParams(16).zipWithIndex
-        .map { case ((a, b), j) => s"($j, ${a}::BIGINT, ${b}::BIGINT)" }
-        .mkString(", ")
-      s"""
-      WITH corpus AS (
-        SELECT doc_id, text FROM $corpusSql WHERE doc_id % 1000000 < 200),
-      docs AS (
-        SELECT doc_id, $sqlShingles3 AS shs
-        FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-              FROM corpus)),
-      sh AS (SELECT doc_id, unnest(shs) AS sh FROM docs),
-      hs AS (SELECT doc_id, ${md5Hash32Sql("sh")} AS h FROM sh),
-      minh AS (
-        SELECT doc_id, params.j, MIN((h * params.a + params.b) % ${graft.dedup.NearDup.minhashPrime}) AS mh
-        FROM hs, (VALUES $params) AS params(j, a, b)
-        GROUP BY doc_id, params.j),
-      bands AS (
-        SELECT doc_id, j // 4 AS band,
-          string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j) AS key
-        FROM minh GROUP BY doc_id, j // 4),
-      cand AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
-        WHERE a.doc_id < b.doc_id),
-      sizes AS (SELECT doc_id, len(shs) AS n FROM docs),
-      inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2)
-      SELECT c.id_a, c.id_b,
-        ROUND(CAST(i.inter AS DOUBLE) / (sa.n + sb.nb - i.inter), 4) AS jaccard
-      FROM cand c
-      JOIN inter i USING (id_a, id_b)
-      JOIN (SELECT doc_id AS id_a, n FROM sizes) sa USING (id_a)
-      JOIN (SELECT doc_id AS id_b, n AS nb FROM sizes) sb USING (id_b)
-      WHERE ROUND(CAST(i.inter AS DOUBLE) / (sa.n + sb.nb - i.inter), 4) >= 0.5
-      ORDER BY id_a, id_b"""
-    },
-    "x6_ann_lsh" -> s"""
-      WITH planes AS (
-        SELECT t.t, p.p,
-          list_transform(range(0, 64), i ->
-            CASE WHEN (strpos('0123456789abcdef',
-                substring(md5(CAST(t.t AS VARCHAR) || '-' || CAST(p.p AS VARCHAR)
-                  || '-' || CAST(i AS VARCHAR)), 4, 1)) - 1) % 2 = 0
-            THEN 1.0 ELSE -1.0 END) AS signs
-        FROM (SELECT unnest(range(0, 8)) AS t) t,
-             (SELECT unnest(range(0, 4)) AS p) p),
-      proj AS (
-        SELECT e.vec_id, pl.t, pl.p,
-          list_sum(list_transform(list_zip(e.embedding, pl.signs),
-            z -> CAST(z[1] AS DOUBLE) * z[2])) AS pr
-        FROM embeddings e, planes pl),
-      buckets AS (
-        SELECT vec_id, t,
-          CAST(SUM(CASE WHEN pr > 0
-            THEN CASE p WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 ELSE 8 END
-            ELSE 0 END) AS INT) AS b
-        FROM proj GROUP BY vec_id, t),
-      cand AS (
-        SELECT DISTINCT q.vec_id AS qid, n.vec_id AS nid
-        FROM buckets q JOIN buckets n ON q.t = n.t AND q.b = n.b
-        WHERE q.vec_id < 5 AND n.vec_id <> q.vec_id),
-      scored AS (
-        SELECT c.qid, c.nid,
-          ROUND(${cosSql("qe.embedding", "ne.embedding")}, 4) AS score
-        FROM cand c
-        JOIN embeddings qe ON qe.vec_id = c.qid
-        JOIN embeddings ne ON ne.vec_id = c.nid),
-      ranked AS (
-        SELECT qid, nid, score,
-          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rk
-        FROM scored)
-      SELECT qid, nid, score, CAST(rk AS INT) AS rk FROM ranked
-      WHERE rk <= 10 ORDER BY qid, rk""",
-    "x13_ann_ivf" -> ivfOracle("e.vec_id < 5"),
-    "x31_ivf_query" -> ivfOracle("e.vec_id >= 5 AND e.vec_id < 10"),
-    "x16_stratified_sample" -> """
-      SELECT lang, doc_id, amostra_chave
-      FROM (SELECT lang, doc_id,
-              md5(CAST(doc_id AS VARCHAR)) AS amostra_chave,
-              ROW_NUMBER() OVER (PARTITION BY lang
-                ORDER BY md5(CAST(doc_id AS VARCHAR))) AS rn
-            FROM documents)
-      WHERE rn <= 5
-      ORDER BY lang, amostra_chave""",
-    "x15_simhash_dedup" -> s"""
-      WITH sigs AS (SELECT * FROM $simhash32Sql)
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-      FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-      ORDER BY id_a, id_b""",
-    "x14_dedup_clusters" -> s"""
-      $dedupClusterCtes
-      SELECT doc_id, canonico, doc_id = canonico AS sobrevivente
-      FROM labels ORDER BY doc_id""",
-    "x24_dedup_survivors" -> s"""
-      $dedupClusterCtes
-      SELECT l.doc_id, c.text
-      FROM labels l JOIN corpus c ON l.doc_id = c.doc_id
-      WHERE l.doc_id = l.canonico
-      ORDER BY l.doc_id""",
-    "x152_quality_survivor" -> s"""
-      $dedupClusterCtes,
-      q AS (SELECT doc_id, CAST(ROUND(ROUND(
-          LEAST(len(toks) / 50.0, 1.0) * 0.4
-          + (1.0 - LEAST(CAST(length(text) - length(regexp_replace(text,
-                '[^A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)
-              / GREATEST(length(text), 1) * 5.0, 1.0)) * 0.3
-          + LEAST(CAST(len(list_filter(toks,
-                t -> t IN ('the', 'a', 'of', 'and'))) AS DOUBLE)
-              / GREATEST(len(toks), 1) * 10.0, 1.0) * 0.3, 4) * 1e4, 0)
-          AS BIGINT) AS q4
-        FROM (SELECT doc_id, text,
-            regexp_split_to_array(trim(text), '\\s+') AS toks
-          FROM corpus)),
-      mem AS (SELECT l.canonico, l.doc_id, q.q4
-        FROM labels l JOIN q USING (doc_id)),
-      sz AS (SELECT canonico, CAST(COUNT(*) AS BIGINT) AS n_membros
-        FROM mem GROUP BY canonico),
-      keep AS (SELECT canonico, doc_id AS keeper, q4 AS keeper_q4 FROM (
-          SELECT canonico, doc_id, q4, ROW_NUMBER() OVER (
-            PARTITION BY canonico ORDER BY q4 DESC, doc_id) AS rk
-          FROM mem)
-        WHERE rk = 1)
-      SELECT k.canonico, s.n_membros, k.keeper,
-        CAST(k.keeper_q4 AS DOUBLE) / 1e4 AS keeper_q,
-        k.keeper <> k.canonico AS policy_differs
-      FROM keep k JOIN sz s USING (canonico)
-      WHERE s.n_membros >= 2
-      ORDER BY k.canonico""",
-    "x12_dedup_cosine" -> """
-      SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        ROUND(
-          list_sum(list_transform(list_zip(a.embedding, b.embedding),
-            p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-          / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-           * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-          4) AS cos
-      FROM embeddings a, embeddings b
-      WHERE a.vec_id < b.vec_id
-        AND ROUND(
-          list_sum(list_transform(list_zip(a.embedding, b.embedding),
-            p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-          / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-           * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-          4) >= 0.4
-      ORDER BY id_a, id_b""",
-    "x9_token_count" -> """
-      SELECT doc_id,
-        CAST(len(regexp_split_to_array(trim(text), '\s+')) AS INT) AS n_tok,
-        CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS INT)
-          AS n_bpeish
-      FROM documents ORDER BY doc_id""",
-    "x8_quality_score" -> """
-      SELECT doc_id, CAST(n_tok AS INT) AS n_tok,
-        ROUND(punct_ratio, 4) AS punct_ratio,
-        ROUND(stop_ratio, 4) AS stop_ratio,
-        ROUND(LEAST(n_tok / 50.0, 1.0) * 0.4
-          + (1.0 - LEAST(punct_ratio * 5.0, 1.0)) * 0.3
-          + LEAST(stop_ratio * 10.0, 1.0) * 0.3, 4) AS quality
-      FROM (
-        SELECT doc_id,
-          len(toks) AS n_tok,
-          CAST(length(text) - length(regexp_replace(text, '[^A-Za-z0-9\s]', '', 'g'))
-            AS DOUBLE) / GREATEST(length(text), 1) AS punct_ratio,
-          CAST(len(list_filter(toks, t -> t IN ('the','a','of','and'))) AS DOUBLE)
-            / GREATEST(len(toks), 1) AS stop_ratio
-        FROM (SELECT doc_id, text,
-                regexp_split_to_array(trim(text), '\s+') AS toks
-              FROM documents))
-      ORDER BY doc_id""",
-    "x7_lang_id" -> """
-      SELECT doc_id,
-        CASE WHEN s_en = best AND s_en > 0 THEN 'en'
-             WHEN s_pt = best AND s_pt > 0 THEN 'pt'
-             WHEN s_de = best AND s_de > 0 THEN 'de'
-             ELSE 'und' END AS lang_detectada
-      FROM (
-        SELECT doc_id, s_en, s_pt, s_de, GREATEST(s_en, s_pt, s_de) AS best
-        FROM (
-          SELECT doc_id,
-            CAST(len(list_filter(toks, t -> t IN ('the','a','and','of'))) AS DOUBLE)
-              / GREATEST(len(toks), 1) AS s_en,
-            CAST(len(list_filter(toks, t -> t IN ('de','o','da','em'))) AS DOUBLE)
-              / GREATEST(len(toks), 1) AS s_pt,
-            CAST(len(list_filter(toks, t -> t IN ('der','die','das','und'))) AS DOUBLE)
-              / GREATEST(len(toks), 1) AS s_de
-          FROM (SELECT doc_id,
-                  regexp_split_to_array(trim(lower(text)), '\s+') AS toks
-                FROM documents)))
-      ORDER BY doc_id""",
-    "x10_fingerprint" -> """
-      SELECT doc_id, md5(lower(trim(text))) AS fp,
-        substring(md5(lower(trim(text))), 1, 16) AS fp_short
-      FROM documents ORDER BY doc_id""",
-    "x1_dedup_exact" -> s"""
-      SELECT md5(lower(trim(text))) AS fp, MIN(doc_id) AS doc_id_mantido,
-        COUNT(*) AS n_copias
-      FROM $corpusSql
-      GROUP BY 1 ORDER BY doc_id_mantido""",
-    "x4_ngram_jaccard" -> s"""
-      WITH corpus AS (
-        SELECT doc_id, text FROM $corpusSql WHERE doc_id % 1000000 < 200),
-      sh AS (
-        SELECT doc_id, unnest($sqlShingles3) AS sh
-        FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-              FROM corpus)),
-      sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-      inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2)
-      SELECT id_a, id_b,
-        ROUND(CAST(inter AS DOUBLE) / (na + nb - inter), 4) AS jaccard
-      FROM inter
-      JOIN (SELECT doc_id AS id_a, n AS na FROM sizes) USING (id_a)
-      JOIN (SELECT doc_id AS id_b, n AS nb FROM sizes) USING (id_b)
-      WHERE ROUND(CAST(inter AS DOUBLE) / (na + nb - inter), 4) >= 0.5
-      ORDER BY id_a, id_b""",
-    "x3_simhash" -> {
-      val votes = (0 until 16).map(i =>
-        s"SUM(CASE WHEN (h // ${1 << i}) % 2 = 1 THEN 1 ELSE -1 END) AS v$i")
-        .mkString(", ")
-      val assemble = (0 until 16).map(i =>
-        s"CASE WHEN v$i > 0 THEN ${1 << i} ELSE 0 END").mkString(" + ")
-      s"""
-      SELECT doc_id, CAST($assemble AS INT) AS simhash
-      FROM (
-        SELECT doc_id, $votes
-        FROM (SELECT doc_id, ${hex16("substring(md5(tok), 1, 4)")} AS h
-              FROM (SELECT doc_id,
-                      unnest(list_distinct(regexp_split_to_array(trim(text), '\\s+')))
-                        AS tok
-                    FROM documents))
-        GROUP BY doc_id)
-      ORDER BY doc_id"""
-    },
-    "x32_quality_calibration" -> x32OracleSql,
-    // x32b stages quality at ingest but must produce the IDENTICAL
-    // result — one oracle proves the staged column carries the score
-    "x32b_quality_ingest" -> x32OracleSql,
-    "x33_substring_dedup" -> s"""
-      WITH corpus AS (
-        SELECT doc_id, text FROM $corpusSql WHERE doc_id % 1000000 < 200),
-      wins AS (
-        SELECT DISTINCT doc_id, md5(substring(text, CAST(i AS INT) * 32 + 1, 64)) AS wh
-        FROM corpus, UNNEST(range(0, (length(text) - 64) // 32 + 1)) AS t(i)
-        WHERE length(text) >= 64),
-      keep AS (
-        SELECT wh FROM (SELECT wh, COUNT(*) AS df FROM wins GROUP BY wh)
-        WHERE df <= 50),
-      p AS (SELECT w.doc_id, w.wh FROM wins w JOIN keep USING (wh))
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        CAST(COUNT(*) AS BIGINT) AS janelas
-      FROM p a JOIN p b ON a.wh = b.wh AND a.doc_id < b.doc_id
-      GROUP BY id_a, id_b
-      ORDER BY id_a, id_b""",
-    "x36_train_split" -> """
-      SELECT doc_id, source,
-        CASE WHEN b < 90 THEN 'train' WHEN b < 95 THEN 'val'
-          ELSE 'test' END AS split,
-        CAST(b AS INT) AS balde
-      FROM (
-        SELECT doc_id, source,
-          ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % 100 AS b
-        FROM documents)
-      ORDER BY doc_id""",
-    "x119_semantic_leakage" -> s"""
-      WITH $ivfAssignedCtes,
-      sp AS (SELECT vec_id, cell, embedding,
-          CASE WHEN b < 90 THEN 'train' WHEN b < 95 THEN 'val'
-            ELSE 'test' END AS split
-        FROM (SELECT vec_id, cell, embedding,
-            ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 4))::BIGINT % 100
-              AS b
-          FROM assigned)),
-      p AS (SELECT e.split, e.vec_id AS id_e, t.vec_id AS id_t
-        FROM sp e JOIN sp t ON e.cell = t.cell
-        WHERE e.split <> 'train' AND t.split = 'train'
-          AND ROUND(${cosSql("e.embedding", "t.embedding")}, 4) >= 0.4),
-      lk AS (SELECT split, CAST(COUNT(*) AS BIGINT) AS leak_pairs,
-          CAST(COUNT(DISTINCT id_e) AS BIGINT) AS n_leaked
-        FROM p GROUP BY split),
-      tot AS (SELECT split, CAST(COUNT(*) AS BIGINT) AS n_docs
-        FROM sp WHERE split <> 'train' GROUP BY split)
-      SELECT t.split, t.n_docs,
-        CAST(COALESCE(lk.n_leaked, 0) AS BIGINT) AS n_leaked,
-        CAST(COALESCE(lk.leak_pairs, 0) AS BIGINT) AS leak_pairs,
-        CAST(((2 * CAST(COALESCE(lk.n_leaked, 0) AS BIGINT) * 10000 + t.n_docs)
-          // (2 * t.n_docs)) AS DOUBLE) / 1e4 AS leak_rate
-      FROM tot t LEFT JOIN lk USING (split) ORDER BY split""",
-    "x35_semantic_dedup" -> s"""
-      WITH RECURSIVE $ivfAssignedCtes,
-      p AS (
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        FROM assigned a JOIN assigned b
-          ON a.cell = b.cell AND a.vec_id < b.vec_id
-        WHERE ROUND(${cosSql("a.embedding", "b.embedding")}, 4) >= 0.4),
-      edges2 AS (
-        SELECT id_a AS a, id_b AS b FROM p
-        UNION ALL SELECT id_b, id_a FROM p),
-      reach(a, b) AS (
-        SELECT a, b FROM edges2
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN edges2 e ON r.b = e.a)
-      SELECT e.vec_id,
-        LEAST(e.vec_id, COALESCE(m.mn, e.vec_id)) AS canonico,
-        (e.vec_id = LEAST(e.vec_id, COALESCE(m.mn, e.vec_id))) AS sobrevivente
-      FROM embeddings e
-      LEFT JOIN (SELECT a, MIN(b) AS mn FROM reach GROUP BY a) m
-        ON e.vec_id = m.a
-      ORDER BY e.vec_id""",
-    "x120_hard_negatives" -> s"""
-      WITH RECURSIVE $ivfAssignedCtes,
-      p AS (
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        FROM assigned a JOIN assigned b
-          ON a.cell = b.cell AND a.vec_id < b.vec_id
-        WHERE ROUND(${cosSql("a.embedding", "b.embedding")}, 4) >= 0.4),
-      edges2 AS (
-        SELECT id_a AS a, id_b AS b FROM p
-        UNION ALL SELECT id_b, id_a FROM p),
-      reach(a, b) AS (
-        SELECT a, b FROM edges2
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN edges2 e ON r.b = e.a),
-      lab AS (
-        SELECT e.vec_id, LEAST(e.vec_id, COALESCE(m.mn, e.vec_id)) AS label
-        FROM embeddings e
-        LEFT JOIN (SELECT a, MIN(b) AS mn FROM reach GROUP BY a) m
-          ON e.vec_id = m.a),
-      av AS (
-        SELECT a.vec_id, a.cell, a.embedding, l.label
-        FROM assigned a JOIN lab l USING (vec_id)),
-      rk AS (
-        SELECT an.vec_id AS anchor, c.vec_id AS neg_id,
-          ROUND(${cosSql("an.embedding", "c.embedding")}, 6) AS cos,
-          ROW_NUMBER() OVER (PARTITION BY an.vec_id
-            ORDER BY ROUND(${cosSql("an.embedding", "c.embedding")}, 6) DESC,
-              c.vec_id) AS rk
-        FROM av an JOIN av c ON an.cell = c.cell AND an.label <> c.label
-        WHERE an.vec_id % 100 = 3)
-      SELECT anchor, CAST(rk AS BIGINT) AS rk, neg_id, cos
-      FROM rk WHERE rk <= 3 ORDER BY anchor, rk""",
-    "x35b_semdedup_nprobe2" -> s"""
-      WITH RECURSIVE $ivfAssignedCtes,
-      probed AS (
-        SELECT vec_id, embedding, cid AS cell FROM (
-          SELECT e.vec_id, e.embedding, c.cid,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id
-              ORDER BY ROUND(${cosSql("e.embedding", "c.ce")}, 6) DESC, c.cid)
-              AS rk
-          FROM embeddings e, cent2 c)
-        WHERE rk <= 2),
-      p AS (
-        SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-        FROM probed a JOIN probed b
-          ON a.cell = b.cell AND a.vec_id < b.vec_id
-        WHERE ROUND(${cosSql("a.embedding", "b.embedding")}, 4) >= 0.4),
-      edges2 AS (
-        SELECT id_a AS a, id_b AS b FROM p
-        UNION ALL SELECT id_b, id_a FROM p),
-      reach(a, b) AS (
-        SELECT a, b FROM edges2
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN edges2 e ON r.b = e.a)
-      SELECT e.vec_id,
-        LEAST(e.vec_id, COALESCE(m.mn, e.vec_id)) AS canonico,
-        (e.vec_id = LEAST(e.vec_id, COALESCE(m.mn, e.vec_id))) AS sobrevivente
-      FROM embeddings e
-      LEFT JOIN (SELECT a, MIN(b) AS mn FROM reach GROUP BY a) m
-        ON e.vec_id = m.a
-      ORDER BY e.vec_id""",
-    "x34_filtered_ann" -> """
-      WITH scored AS (
-        SELECT q.vec_id AS qid, n.vec_id AS nid,
-          ROUND(
-            list_sum(list_transform(list_zip(q.embedding, n.embedding),
-              p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-            / (sqrt(list_sum(list_transform(q.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-             * sqrt(list_sum(list_transform(n.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-            4) AS score
-        FROM embeddings q, embeddings n
-        WHERE q.vec_id < 5 AND n.label = 0 AND n.vec_id <> q.vec_id),
-      ranked AS (
-        SELECT qid, nid, score,
-          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rk
-        FROM scored)
-      SELECT qid, nid, score, CAST(rk AS INT) AS rk FROM ranked
-      WHERE rk <= 10 ORDER BY qid, rk""",
-    "x5_ann_cosine" -> """
-      WITH scored AS (
-        SELECT q.vec_id AS qid, n.vec_id AS nid,
-          ROUND(
-            list_sum(list_transform(list_zip(q.embedding, n.embedding),
-              p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-            / (sqrt(list_sum(list_transform(q.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-             * sqrt(list_sum(list_transform(n.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-            4) AS score
-        FROM embeddings q, embeddings n
-        WHERE q.vec_id < 5 AND n.vec_id <> q.vec_id),
-      ranked AS (
-        SELECT qid, nid, score,
-          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rk
-        FROM scored)
-      SELECT qid, nid, score, CAST(rk AS INT) AS rk FROM ranked
-      WHERE rk <= 10 ORDER BY qid, rk""")
 }

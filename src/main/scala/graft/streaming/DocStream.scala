@@ -109,9 +109,10 @@ object DocStream {
       Seq("doc_id"), "left_anti")
 
   /** Model-gate admission for one micro-batch against the persisted
-    * classifier weight REGISTRY ([[graft.queries.TrainingData
+    * classifier weight REGISTRY ([[graft.queries.TrainingDataClassifier
     * .ensureClfWeights]]): the batch pays its own feature build (the
-    * trainer's exact [[graft.queries.TrainingData.clfFeatures]] rows
+    * trainer's exact
+    * [[graft.queries.TrainingDataClassifier.clfFeatures]] rows
     * — streaming cannot drift from the features the weights were
     * trained on), a 68-row broadcast join, and the 1e-6-quantized σ;
     * docs scoring p ≥ 0.5 ride through, the rest drop. Zero-token
@@ -124,8 +125,8 @@ object DocStream {
   def admitQuality(spark: SparkSession, batch: DataFrame,
       weightsPath: String): DataFrame = {
     val wdf = spark.read.parquet(weightsPath)
-    val kept = graft.queries.TrainingData.clfScores(
-        graft.queries.TrainingData.clfFeatures(batch), wdf)
+    val kept = graft.queries.TrainingDataClassifier.clfScores(
+        graft.queries.TrainingDataClassifier.clfFeatures(batch), wdf)
       .filter(col("pq") >= 500000L)
       .select(col("doc_id"))
     batch.join(kept, Seq("doc_id"), "left_semi")
@@ -330,8 +331,8 @@ object DocStream {
   /** Streaming HyperLogLog registers (x169's sketch as a WATERMARKED
     * WINDOWED aggregation): per event-time window, the (register j,
     * max rank) pairs under x169's md5₃₂ coordinates
-    * ([[graft.queries.TrainingData.hllJ]]/[[graft.queries
-    * .TrainingData.hllRho]] — shared verbatim, the CMS convention).
+    * ([[graft.queries.TrainingDataMixture.hllJ]]/[[graft.queries
+    * .TrainingDataMixture.hllRho]] — shared verbatim, the CMS convention).
     * State is windows-in-flight × ≤ 64 registers — bounded regardless
     * of vocabulary or throughput — and the registers MERGE: the union
     * of any window set is their register-wise max, HLL's defining
@@ -345,8 +346,8 @@ object DocStream {
       .select(col(tsCol),
         explode(graft.text.TextFunctions.wsTokens(col("text"))).as("w"))
       .select(col(tsCol),
-        graft.queries.TrainingData.hllJ(col("w")).as("j"),
-        graft.queries.TrainingData.hllRho(col("w")).as("rho"))
+        graft.queries.TrainingDataMixture.hllJ(col("w")).as("j"),
+        graft.queries.TrainingDataMixture.hllRho(col("w")).as("rho"))
       .withWatermark(tsCol, watermark)
       .groupBy(window(col(tsCol), windowDur), col("j"))
       .agg(max(col("rho")).as("m"))

@@ -81,11 +81,11 @@ class EdgeCaseSpec extends AnyFunSuite {
     // the scalar totals go null — scores degrade to null rows, no
     // throw (the CCNet shape with a misconfigured train filter)
     val emptyTrain = corpus.filter(col("doc_id") < 0)
-    val kn = graft.queries.TrainingData
+    val kn = graft.queries.TrainingDataLm
       .knTrigramScores(corpus, emptyTrain).collect()
     assert(kn.forall(r => r.isNullAt(2) || r.getDouble(2) >= 0.0))
     // KN scoring an empty corpus: no steps, empty output
-    assert(graft.queries.TrainingData
+    assert(graft.queries.TrainingDataLm
       .knTrigramScores(emptyTrain, corpus).count() == 0)
     // dHash / energy trim on empty payloads and empty frames
     val wp = graft.multimodal.Multimodal.withBinaryPayload(corpus)
@@ -98,7 +98,7 @@ class EdgeCaseSpec extends AnyFunSuite {
     // ("uma duas tres" twins) collide at hamming 0; nothing throws
     val sigs = graft.multimodal.Multimodal.dHash64(spark, wp)
       .toDF().select(col("doc_id"), col("dhash").as("simhash"))
-    val pairs = graft.queries.TrainingData
+    val pairs = graft.queries.TrainingDataDedup
       .simhashBandedPairs(sigs, 16, 4, 3).collect()
     assert(pairs.exists(r =>
       r.getLong(0) == 5L && r.getLong(1) == 7L && r.getInt(2) == 0))
@@ -114,7 +114,7 @@ class EdgeCaseSpec extends AnyFunSuite {
   test("packing and chunking handle empty and sub-budget docs") {
     val rows = corpus.select(col("doc_id"), lit("s").as("source"),
       tokenCount(col("text")).cast("long").as("n_tok"))
-    val packed = graft.queries.TrainingData
+    val packed = graft.queries.TrainingDataQuality
       .packSequences(rows, b = 16, subShards = 1).collect()
     // zero-token docs are excluded; token mass is conserved
     val totalTok = rows.agg(sum(col("n_tok"))).head().getLong(0)

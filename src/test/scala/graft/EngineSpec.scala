@@ -8,7 +8,8 @@ import graft.etl.StagingPipeline
 import graft.functions.BrFunctions._
 import graft.multimodal.Multimodal
 import graft.profiling.Profiler
-import graft.queries.TrainingData
+import graft.queries.{TrainingData, TrainingDataAnn, TrainingDataClassifier,
+  TrainingDataDedup, TrainingDataLm, TrainingDataMixture, TrainingDataQuality}
 
 /** Engine-level behavior: schema mapping, staging audits, profiling
   * classification, dedup/ANN recall, multimodal plumbing. */
@@ -68,9 +69,9 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("MinHash LSH recall vs exact n-gram Jaccard pairs >= 0.95") {
-    val exact = TrainingData.x4NgramJaccard(spark, sf)
+    val exact = TrainingDataDedup.x4NgramJaccard(spark, sf)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lsh = TrainingData.x2DedupMinhash(spark, sf)
+    val lsh = TrainingDataDedup.x2DedupMinhash(spark, sf)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact.nonEmpty)
     val recall = (exact & lsh).size.toDouble / exact.size
@@ -78,10 +79,10 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("dedup clusters: every dup-pair shares one canonical label, survivors are minima") {
-    val labels = TrainingData.x14DedupClusters(spark, sf)
+    val labels = TrainingDataDedup.x14DedupClusters(spark, sf)
     val byId = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // pair endpoints must land in the same component
-    TrainingData.x4NgramJaccard(spark, sf).select("id_a", "id_b").collect()
+    TrainingDataDedup.x4NgramJaccard(spark, sf).select("id_a", "id_b").collect()
       .foreach { r =>
         assert(byId(r.getLong(0)) == byId(r.getLong(1)),
           s"pair ${r.getLong(0)}~${r.getLong(1)} split across components")
@@ -91,19 +92,19 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("ANN LSH recall vs brute-force cosine top-10 >= 0.4 (isotropic data)") {
-    val exact = TrainingData.x5AnnCosine(spark, sf)
+    val exact = TrainingDataAnn.x5AnnCosine(spark, sf)
       .select("qid", "nid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lsh = TrainingData.x6AnnLsh(spark, sf)
+    val lsh = TrainingDataAnn.x6AnnLsh(spark, sf)
       .select("qid", "nid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (exact & lsh).size.toDouble / exact.size
     assert(recall >= 0.4, s"ann lsh recall $recall")
   }
 
   test("IVF ANN: Lloyd-trained quantizer recall >= untrained, >= 0.4") {
-    val exact = TrainingData.x5AnnCosine(spark, sf)
+    val exact = TrainingDataAnn.x5AnnCosine(spark, sf)
       .select("qid", "nid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def recallOf(iters: Int): Double = {
-      val ivf = TrainingData.ivfTopK(spark, sf, lloydIters = iters)
+      val ivf = TrainingDataAnn.ivfTopK(spark, sf, lloydIters = iters)
         .select("qid", "nid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       (exact & ivf).size.toDouble / exact.size
     }
@@ -122,7 +123,7 @@ class EngineSpec extends AnyFunSuite {
     println(s"[ivf] recall untrained=$untrained trained=$trained")
     // cell balance: max cell size of the trained vs untrained index
     def maxCell(iters: Int): Long = {
-      val balance = TrainingData.ivfCells(spark, sf, lloydIters = iters)
+      val balance = TrainingDataAnn.ivfCells(spark, sf, lloydIters = iters)
         .groupBy("cell").count().collect().map(_.getAs[Long]("count"))
       println(s"[ivf] iters=$iters cells=${balance.length} max=${balance.max}")
       balance.max
@@ -150,7 +151,7 @@ class EngineSpec extends AnyFunSuite {
     val totalToks = docs
       .select(graft.text.TextFunctions.tokenCount(col("text")).as("n"))
       .agg(sum("n")).collect()(0).getLong(0)
-    val packed = TrainingData.x25PackSequences(spark, sf)
+    val packed = TrainingDataQuality.x25PackSequences(spark, sf)
     // every token lands in exactly one sequence slot — sub-sharding
     // redistributes docs but conserves the total
     assert(packed.agg(sum("n_tokens")).collect()(0).getLong(0) == totalToks)
@@ -179,7 +180,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("PII redaction scrubs every injected email and phone") {
-    val out = TrainingData.x26PiiRedaction(spark, sf)
+    val out = TrainingDataQuality.x26PiiRedaction(spark, sf)
     // injected cadence: every 7th doc an email, every 11th a phone
     val bad = out.filter(
       (col("doc_id") % 7 === 0 && col("n_emails") < 1) ||
@@ -187,12 +188,12 @@ class EngineSpec extends AnyFunSuite {
     assert(bad == 0)
     // the redacted text has no residual matches: re-running redaction
     // over an already-redacted corpus must be a fixpoint
-    val redacted = TrainingData.piiFixpointProbe(spark, sf)
+    val redacted = TrainingDataQuality.piiFixpointProbe(spark, sf)
     assert(redacted == 0, s"$redacted docs still match PII regexes after redaction")
   }
 
   test("domain mixture pro-rates the budget across sub-shards and fills each") {
-    val out = TrainingData.x27DomainMixture(spark, sf)
+    val out = TrainingDataMixture.x27DomainMixture(spark, sf)
     // the greedy prefix never starts a doc at or past its shard quota
     assert(out.filter(col("tok_antes") >= col("cota")).count() == 0)
     // pro-rating: per source, the shard quotas sum to within one
@@ -226,7 +227,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("quality calibration keeps at most the top 40% of each source") {
-    val out = TrainingData.x32QualityCalibration(spark, sf)
+    val out = TrainingDataQuality.x32QualityCalibration(spark, sf)
     assert(out.count() > 0)
     val totals = Tables.documents(spark, sf).groupBy("source")
       .agg(count(lit(1)).as("total"))
@@ -242,7 +243,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("filtered ANN searches only the label-0 catalog, dense top-k") {
-    val out = TrainingData.x34FilteredAnn(spark, sf)
+    val out = TrainingDataAnn.x34FilteredAnn(spark, sf)
     assert(out.count() > 0)
     val lab = Tables.embeddings(spark, sf)
       .select(col("vec_id").as("nid"), col("label"))
@@ -256,7 +257,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("unigram log-perplexity is positive and conserves token counts") {
-    val out = TrainingData.x39UnigramLogppl(spark, sf)
+    val out = TrainingDataLm.x39UnigramLogppl(spark, sf)
     // every doc has at least one token with corpus probability < 1,
     // so the mean negative log-probability is strictly positive
     assert(out.filter(col("ppl_proxy") <= 0).count() == 0)
@@ -269,7 +270,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("bigram log-perplexity conserves bigram counts and orders below-unigram") {
-    val out = TrainingData.x40BigramLogppl(spark, sf)
+    val out = TrainingDataLm.x40BigramLogppl(spark, sf)
     // no negative steps: c(w1 w2) <= c(w1) by construction
     assert(out.filter(col("ppl2_proxy") < 0).count() == 0)
     // conservation: a doc with n tokens has exactly n-1 bigrams; docs
@@ -283,13 +284,13 @@ class EngineSpec extends AnyFunSuite {
     // the conditional model can only be more predictable than the
     // unigram one ON AVERAGE over the corpus (per-doc it may not be)
     val m2 = out.agg(avg(col("ppl2_proxy"))).collect()(0).getDouble(0)
-    val m1 = TrainingData.x39UnigramLogppl(spark, sf)
+    val m1 = TrainingDataLm.x39UnigramLogppl(spark, sf)
       .agg(avg(col("ppl_proxy"))).collect()(0).getDouble(0)
     assert(m2 < m1, s"bigram mean $m2 not below unigram mean $m1")
   }
 
   test("duplicate-3gram fraction conserves gram counts and bounds the ratio") {
-    val out = TrainingData.x41GopherDupNgrams(spark, sf)
+    val out = TrainingDataQuality.x41GopherDupNgrams(spark, sf)
     assert(out.filter(col("dup_ratio") < 0 || col("dup_ratio") > 1).count() == 0)
     assert(out.filter(col("dup_3gram_n") > col("total_3grams")).count() == 0)
     // a doc with n tokens has exactly n-2 3-gram slots; <3-token docs absent
@@ -302,7 +303,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("DSIR weights rank target-domain docs above the rest on average") {
-    val out = TrainingData.x42DsirWeights(spark, sf)
+    val out = TrainingDataMixture.x42DsirWeights(spark, sf)
       .join(Tables.documents(spark, sf).select(col("doc_id"), col("lang")), "doc_id")
     // the target LM is fit ON the en slice, so en docs must score
     // higher under ln p_target - ln p_raw in expectation
@@ -320,7 +321,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("int8 quantization error stays under half a code step") {
-    val out = TrainingData.x43EmbedQuantize(spark, sf)
+    val out = TrainingDataAnn.x43EmbedQuantize(spark, sf)
     assert(out.count() == Tables.embeddings(spark, sf).count(),
       "a vector dropped out (zero-norm guard should not fire on the fixture)")
     // symmetric SQ8: |x - q*s| <= s/2 where the code step s = mx/127;
@@ -333,7 +334,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("length histogram conserves docs and tokens per source") {
-    val out = TrainingData.x38LengthHistogram(spark, sf)
+    val out = TrainingDataQuality.x38LengthHistogram(spark, sf)
     val expect = Tables.documents(spark, sf)
       .select(col("source"),
         graft.text.TextFunctions.tokenCount(col("text")).cast("long").as("n"))
@@ -349,11 +350,11 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("per-source funnel reconciles with the global funnel") {
-    val per = TrainingData.x37FunnelBySource(spark, sf)
+    val per = TrainingDataMixture.x37FunnelBySource(spark, sf)
       .agg(sum("bruto").as("b"), sum("idioma").as("i"),
         sum("qualidade").as("q"), sum("dedup_exato").as("d"))
       .collect()(0)
-    val global = TrainingData.x21CurationFunnel(spark, sf).collect()
+    val global = TrainingDataMixture.x21CurationFunnel(spark, sf).collect()
       .map(r => r.getString(1) -> r.getLong(2)).toMap
     assert(per.getLong(0) == global("bruto"))
     assert(per.getLong(1) == global("idioma"))
@@ -364,7 +365,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("train split is complete, disjoint, and near the 90/5/5 recipe") {
-    val out = TrainingData.x36TrainSplit(spark, sf)
+    val out = TrainingDataMixture.x36TrainSplit(spark, sf)
     val total = Tables.documents(spark, sf).count()
     assert(out.count() == total)
     val frac = out.groupBy("split").count().collect()
@@ -385,7 +386,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("semantic dedup labels are canonical min-ids with consistent survivors") {
-    val out = TrainingData.x35SemanticDedup(spark, sf)
+    val out = TrainingDataAnn.x35SemanticDedup(spark, sf)
     assert(out.count() == Tables.embeddings(spark, sf).count())
     // canonical label is the component minimum: never above the member
     assert(out.filter(col("canonico") > col("vec_id")).count() == 0)
@@ -400,7 +401,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("label centroids equal the brute-force per-label mean") {
-    val cents = TrainingData.x28LabelCentroids(spark, sf)
+    val cents = TrainingDataAnn.x28LabelCentroids(spark, sf)
       .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     val brute = Tables.embeddings(spark, sf)
       .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
@@ -413,15 +414,15 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("bloom-prefiltered dedup is bit-identical to the exact anti-join") {
-    val exact = TrainingData.x22IncrementalDedup(spark, sf)
-    val bloom = TrainingData.x29BloomDedup(spark, sf)
+    val exact = TrainingDataDedup.x22IncrementalDedup(spark, sf)
+    val bloom = TrainingDataDedup.x29BloomDedup(spark, sf)
     assert(bloom.count() == exact.count())
     assert(bloom.exceptAll(exact).count() == 0)
     assert(exact.exceptAll(bloom).count() == 0)
   }
 
   test("tf-idf top-k: ranks are dense per doc and idf falls with df") {
-    val out = TrainingData.x30TfidfTopk(spark, sf).collect()
+    val out = TrainingDataQuality.x30TfidfTopk(spark, sf).collect()
     val byDoc = out.groupBy(_.getLong(0))
     assert(byDoc.values.forall(rs =>
       rs.map(_.getInt(5)).sorted.sameElements(1 to rs.length)))
@@ -436,7 +437,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("vocab coverage curve is monotone and conserves token mass") {
-    val rows = TrainingData.x44VocabCoverage(spark, sf).collect()
+    val rows = TrainingDataLm.x44VocabCoverage(spark, sf).collect()
     assert(rows.map(_.getInt(0)).toSeq == Seq(100, 1000, 10000))
     val totalTok = Tables.documents(spark, sf)
       .select(explode(graft.text.TextFunctions.wsTokens(col("text"))))
@@ -459,7 +460,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("cluster diversity matches the brute-force pairwise mean") {
-    val out = TrainingData.x45ClusterDiversity(spark, sf).collect()
+    val out = TrainingDataAnn.x45ClusterDiversity(spark, sf).collect()
       .map(r => r.getInt(0) -> (r.getLong(1), r.getDouble(2))).toMap
     val vecs = Tables.embeddings(spark, sf)
       .select(col("label"), col("embedding")).collect()
@@ -480,7 +481,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("embedding covariance matches the brute-force matrix") {
-    val out = TrainingData.x46EmbedCovariance(spark, sf).collect()
+    val out = TrainingDataAnn.x46EmbedCovariance(spark, sf).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     val xs = Tables.embeddings(spark, sf).select(col("embedding")).collect()
       .map(_.getSeq[Float](0).map(_.toDouble).toArray)
@@ -501,7 +502,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("embedding correlation matches brute force; diagonal is exactly 1") {
-    val out = TrainingData.x48EmbedCorrelation(spark, sf).collect()
+    val out = TrainingDataAnn.x48EmbedCorrelation(spark, sf).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     val xs = Tables.embeddings(spark, sf).select(col("embedding")).collect()
       .map(_.getSeq[Float](0).map(_.toDouble).toArray)
@@ -522,7 +523,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("pca projection aligns with an independent eigensolve") {
-    val out = TrainingData.x49PcaProject(spark, sf).collect()
+    val out = TrainingDataAnn.x49PcaProject(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val rows = Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding")).collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toArray)
@@ -565,7 +566,7 @@ class EngineSpec extends AnyFunSuite {
     // empirical variance 1 (exact by the Rayleigh-quotient scaling,
     // up to the 1e-6/1e-8 quantization), mean 0 (the μ·u offset), and
     // the two components decorrelate (deflation orthogonality)
-    val out = TrainingData.defs("x65_embed_whiten")(spark, sf).collect()
+    val out = SparkEntry.queries("x65_embed_whiten")(spark, sf).collect()
       .map(r => (r.getDouble(1), r.getDouble(2)))
     val n = out.length
     assert(n > 0)
@@ -585,7 +586,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("mixture weights: probabilities sum to 1, epochs conserve the budget") {
-    val out = TrainingData.x50MixtureWeights(spark, sf).collect()
+    val out = TrainingDataMixture.x50MixtureWeights(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
     assert(out.nonEmpty)
     assert(math.abs(out.map(_._3).sum - 1.0) < 1e-4, "p_sample should sum to 1")
@@ -604,7 +605,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("embedding standardization: z-scores have zero mean and unit variance per dim") {
-    val rows = TrainingData.x51EmbedStandardize(spark, sf).collect()
+    val rows = TrainingDataAnn.x51EmbedStandardize(spark, sf).collect()
       .map(r => (r.getInt(1), r.getDouble(2)))
     val byDim = rows.groupBy(_._1).map { case (i, zs) => i -> zs.map(_._2) }
     assert(byDim.nonEmpty)
@@ -619,7 +620,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("ngram novelty matches a brute-force document-frequency count") {
-    val out = TrainingData.x52NgramNovelty(spark, sf).collect()
+    val out = TrainingDataQuality.x52NgramNovelty(spark, sf).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
     val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text")).collect()
       .map(r => r.getLong(0) -> r.getString(1).trim.split("\\s+").toSeq
@@ -656,7 +657,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("source overlap estimate tracks the exact shingle Jaccard on the fixture") {
-    val out = TrainingData.x47SourceOverlap(spark, sf).collect()
+    val out = TrainingDataAnn.x47SourceOverlap(spark, sf).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(3)).toMap
     val sets = Tables.documents(spark, sf).select(col("source"), col("text")).collect()
       .groupBy(_.getString(0))
@@ -678,7 +679,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("char entropy matches a per-doc Shannon recomputation") {
-    val out = TrainingData.x53CharEntropy(spark, sf).collect()
+    val out = TrainingDataQuality.x53CharEntropy(spark, sf).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
     val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
       .collect().map(r => r.getLong(0) -> r.getString(1))
@@ -697,7 +698,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("token fertility recomputes from raw per-source sums") {
-    val out = TrainingData.x54TokenFertility(spark, sf).collect()
+    val out = TrainingDataLm.x54TokenFertility(spark, sf).collect()
       .map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
           r.getDouble(5), r.getDouble(6))).toMap
@@ -720,7 +721,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("language divergence matches an exact JSD recomputation, in [0,1]") {
-    val out = TrainingData.x55LangDivergence(spark, sf).collect()
+    val out = TrainingDataQuality.x55LangDivergence(spark, sf).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
     val rows = Tables.documents(spark, sf)
       .select(col("source"), col("lang")).collect()
@@ -746,7 +747,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("chunking covers every token with the declared stride and overlap") {
-    val out = TrainingData.x56ChunkDocuments(spark, sf).collect()
+    val out = TrainingDataQuality.x56ChunkDocuments(spark, sf).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getString(4)))
     val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
       .collect().map(r => r.getLong(0) -> r.getString(1).trim.split("\\s+").toSeq).toMap
@@ -773,7 +774,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("embedding outlier scores: mean squared RMS-z is 1 by construction") {
-    val out = TrainingData.x57EmbedOutliers(spark, sf).collect()
+    val out = TrainingDataAnn.x57EmbedOutliers(spark, sf).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2), r.getBoolean(3)))
     assert(out.nonEmpty)
     // Σ_v Σ_i z_vi² = n·d for biased-variance z-scores, so the mean of
@@ -785,7 +786,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("containment pairs: truncations read 1.0 and expose the Jaccard miss") {
-    val out = TrainingData.x58ContainmentDedup(spark, sf).collect()
+    val out = TrainingDataDedup.x58ContainmentDedup(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
     assert(out.nonEmpty)
     def shingles(t: String) = t.trim.split("\\s+").toSeq
@@ -820,7 +821,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("dedup mass audit: per-source totals reconcile with the survivor set") {
-    val out = TrainingData.x59DedupMass(spark, sf).collect()
+    val out = TrainingDataDedup.x59DedupMass(spark, sf).collect()
       .map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5)))
       .toMap
@@ -831,7 +832,7 @@ class EngineSpec extends AnyFunSuite {
     // corpus = base + exact copy + near copy per base doc
     assert(out.values.map(_._1).sum == 3L * srcOf.size, "corpus size")
     // survivor count from the end-to-end operator must match n_kept
-    val survivors = TrainingData.x24DedupSurvivors(spark, sf).collect()
+    val survivors = TrainingDataDedup.x24DedupSurvivors(spark, sf).collect()
       .map(_.getLong(0))
     val keptBySrc = survivors.groupBy(id => srcOf(id % 1000000L))
       .view.mapValues(_.length.toLong).toMap
@@ -843,7 +844,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("signature store: incremental pairs equal a fresh two-sided LSH run") {
-    val inc = TrainingData.x60SignatureStore(spark, sf).collect()
+    val inc = TrainingDataDedup.x60SignatureStore(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     // fresh run over old ∪ batch: cross pairs are exactly (old, new)
     // because old ids < 1M <= new ids and pairs are emitted id_a < id_b
@@ -862,7 +863,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("quality sampling is pure hash thresholding, reproducible per doc") {
-    val out = TrainingData.x61QualitySampling(spark, sf).collect()
+    val out = TrainingDataMixture.x61QualitySampling(spark, sf).collect()
       .map(r => (r.getLong(0), r.getDouble(2), r.getDouble(3), r.getDouble(4),
         r.getBoolean(5)))
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -878,7 +879,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("lsh recall audit: bounded, and tracks the S-curve direction") {
-    val rows = TrainingData.x62LshEval(spark, sf).collect()
+    val rows = TrainingDataDedup.x62LshEval(spark, sf).collect()
       .map(r => (r.getDouble(0), r.getLong(1), r.getLong(2), r.getDouble(3),
         r.getDouble(4)))
     assert(rows.length >= 4, "prefix copies should populate several bands")
@@ -893,7 +894,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("pmi co-occurrence matches a brute-force window count") {
-    val out = TrainingData.x63PmiCooccurrence(spark, sf).collect()
+    val out = TrainingDataLm.x63PmiCooccurrence(spark, sf).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3)))
     assert(out.length == 100)
     val docs = Tables.documents(spark, sf).select(col("text")).collect()
@@ -937,7 +938,7 @@ class EngineSpec extends AnyFunSuite {
       (3L, "a b d"),   // tri+bigram(bd) unseen, d seen → 0.16·(3+1)/16
       (4L, "a b zz"))  // zz unknown → 0.16·(0+1)/16 = 0.01
       .toDF("doc_id", "text")
-    val got = TrainingData.backoffTrigramScores(probe, train)
+    val got = TrainingDataLm.backoffTrigramScores(probe, train)
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     def q(s: Double) = BigDecimal(-math.log(s) * 1e4)
       .setScale(0, BigDecimal.RoundingMode.HALF_UP).toDouble / 1e4
@@ -963,13 +964,13 @@ class EngineSpec extends AnyFunSuite {
       .forall(r => r.getInt(0) < 16 && r.getInt(1) >= 0))
     // recall@10 must beat the random-overlap baseline (~10/N) by a
     // wide margin — 32x compression loses precision, not everything
-    val recall = TrainingData.defs("x99_pq_recall")(spark, sf)
+    val recall = SparkEntry.queries("x99_pq_recall")(spark, sf)
       .agg(avg(col("recall_at_10"))).collect().head.getDouble(0)
     assert(recall > 0.05, s"mean ADC recall $recall at chance level")
   }
 
   test("x100 IVF-PQ serving: full result sets, monotone ADC, probed cells only") {
-    val out = TrainingData.defs("x100_ivfpq_query")(spark, sf)
+    val out = SparkEntry.queries("x100_ivfpq_query")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
     val byQ = out.groupBy(_._1)
     assert(byQ.keySet == (0L until 5L).toSet)
@@ -1010,7 +1011,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x104 pairing audit reports exactly the planted embedding hole") {
-    val rows = TrainingData.defs("x104_pairing_audit")(spark, sf).collect()
+    val rows = SparkEntry.queries("x104_pairing_audit")(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getDouble(4), r.getLong(5)))
     // the withheld shard is md5₃₂(vec_id) % 10 == 7 — per-source
@@ -1031,10 +1032,10 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x62b tuner: grid complete, hand-checked points, chosen is optimal") {
-    val out = TrainingData.defs("x62b_lsh_tuner")(spark, sf).collect()
+    val out = SparkEntry.queries("x62b_lsh_tuner")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3),
         r.getDouble(4), r.getLong(5), r.getBoolean(6)))
-    assert(out.length == TrainingData.lshTunerGrid.size)
+    assert(out.length == TrainingDataDedup.lshTunerGrid.size)
     val byCfg = out.map(t => (t._2, t._3) -> t).toMap
     // hand-computable S-curve points: b=1 collapses to one band
     assert(byCfg((1L, 1L))._4 == 0.5)      // 1 − (1 − 0.5) exactly
@@ -1076,7 +1077,7 @@ class EngineSpec extends AnyFunSuite {
       (3L, "a b d"),   // seen context, unseen trigram → pure lambda·P2
       (4L, "a b zz"))  // unknown word → funded by the uniform base
       .toDF("doc_id", "text")
-    val got = TrainingData.knTrigramScores(probe, train)
+    val got = TrainingDataLm.knTrigramScores(probe, train)
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     // replicate the engine's exact double chain (D=3/4 via max(4c−3,0))
     def p1(cc1: Long) =
@@ -1096,7 +1097,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x83 KN en-trained LM separates en docs (CCNet shape)") {
-    val rows = TrainingData.defs("x83_kn_logppl")(spark, sf)
+    val rows = SparkEntry.queries("x83_kn_logppl")(spark, sf)
       .join(Tables.documents(spark, sf).select(col("doc_id"), col("lang")),
         Seq("doc_id"))
       .groupBy(col("lang") === "en")
@@ -1108,9 +1109,9 @@ class EngineSpec extends AnyFunSuite {
 
   test("x83 vs x64: KN beats stupid backoff on held-out text (r7 item 2 pin)") {
     val langs = Tables.documents(spark, sf).select(col("doc_id"), col("lang"))
-    val kn = TrainingData.defs("x83_kn_logppl")(spark, sf)
+    val kn = SparkEntry.queries("x83_kn_logppl")(spark, sf)
       .select(col("doc_id"), col("ppl3_kn"))
-    val sb = TrainingData.defs("x64_backoff_logppl")(spark, sf)
+    val sb = SparkEntry.queries("x64_backoff_logppl")(spark, sf)
       .select(col("doc_id"), col("ppl3_proxy"))
     val m = kn.join(sb, Seq("doc_id")).join(langs, Seq("doc_id"))
       .groupBy(col("lang") === "en")
@@ -1128,7 +1129,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x64 en-trained LM separates en docs from the rest (CCNet shape)") {
-    val rows = TrainingData.defs("x64_backoff_logppl")(spark, sf)
+    val rows = SparkEntry.queries("x64_backoff_logppl")(spark, sf)
       .join(Tables.documents(spark, sf).select(col("doc_id"), col("lang")),
         Seq("doc_id"))
       .groupBy(col("lang") === "en")
@@ -1142,9 +1143,9 @@ class EngineSpec extends AnyFunSuite {
     // one contract: per doc, x87's n_drop must equal x66's n_boiler,
     // and the cleaned token count must equal the un-dropped remainder
     // in 8-token units (last segment may be short — bound, not equal)
-    val det = TrainingData.defs("x66_boilerplate_segments")(spark, sf)
+    val det = SparkEntry.queries("x66_boilerplate_segments")(spark, sf)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val strip = TrainingData.defs("x87_boilerplate_strip")(spark, sf)
+    val strip = SparkEntry.queries("x87_boilerplate_strip")(spark, sf)
       .collect()
     assert(strip.length == det.size)
     strip.foreach { r =>
@@ -1160,7 +1161,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x88 keeps the best-quality doc per dup family, one per family") {
-    val rows = TrainingData.defs("x88_quality_survivors")(spark, sf)
+    val rows = SparkEntry.queries("x88_quality_survivors")(spark, sf)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3)))
     val byFam = rows.groupBy(_._2)
@@ -1181,7 +1182,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x91 precision audit: shares sum to 1, top band dominated by dups") {
-    val rows = TrainingData.defs("x91_lsh_precision")(spark, sf)
+    val rows = SparkEntry.queries("x91_lsh_precision")(spark, sf)
       .collect()
       .map(r => (r.getDouble(0), r.getLong(1), r.getDouble(2), r.getBoolean(3)))
     val shareSum = rows.map(_._3).sum
@@ -1196,7 +1197,7 @@ class EngineSpec extends AnyFunSuite {
     val srcOf = docs.select(col("doc_id"), col("source")).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     val srcCnt = srcOf.values.groupBy(identity).view.mapValues(_.size).toMap
-    val out = TrainingData.defs("x66_boilerplate_segments")(spark, sf)
+    val out = SparkEntry.queries("x66_boilerplate_segments")(spark, sf)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(out.length == srcOf.size)
@@ -1212,7 +1213,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x67 vocab growth conserves type and token mass, cumulatives run") {
-    val out = TrainingData.defs("x67_vocab_growth")(spark, sf).collect()
+    val out = SparkEntry.queries("x67_vocab_growth")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4)))
     assert(out.nonEmpty && out.length <= 10)
@@ -1230,7 +1231,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x68 PSI: nonnegative per-bin contributions summing to the total") {
-    val out = TrainingData.defs("x68_quality_psi")(spark, sf).collect()
+    val out = SparkEntry.queries("x68_quality_psi")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3),
         r.getDouble(4)))
     assert(out.length == 10, "explicit decile grid")
@@ -1246,7 +1247,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x69 prototypicality: dense in-label ranks ordered by cosine") {
-    val out = TrainingData.defs("x69_prototypicality")(spark, sf).collect()
+    val out = SparkEntry.queries("x69_prototypicality")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2), r.getInt(3)))
     assert(out.map(_._1).distinct.length == out.length, "one row per vector")
     out.foreach { case (id, _, c, _) =>
@@ -1276,7 +1277,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x70 mixture sampling: rate capped at 1, capped sources kept whole") {
-    val out = TrainingData.defs("x70_mixture_sample")(spark, sf).collect()
+    val out = SparkEntry.queries("x70_mixture_sample")(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3),
         r.getLong(4), r.getLong(5)))
     assert(out.nonEmpty)
@@ -1295,7 +1296,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x71 split leakage: splits partition the corpus, copies leak") {
-    val out = TrainingData.defs("x71_split_leakage")(spark, sf).collect()
+    val out = SparkEntry.queries("x71_split_leakage")(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(out.map(_._1).sorted.toSeq == Seq("test", "train", "val"))
     val corpusN = Tables.documents(spark, sf)
@@ -1311,7 +1312,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x72 edit verification confirms the copy families with exact lev") {
-    val out = TrainingData.defs("x72_edit_verify")(spark, sf).collect()
+    val out = SparkEntry.queries("x72_edit_verify")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3),
         r.getLong(4), r.getDouble(5), r.getBoolean(6)))
     assert(out.nonEmpty)
@@ -1334,7 +1335,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x73 dup-graph stats conserve edge and doc mass vs the pair list") {
-    val out = TrainingData.defs("x73_dup_graph_stats")(spark, sf).collect()
+    val out = SparkEntry.queries("x73_dup_graph_stats")(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     val deg = out.filter(_._1 == "degree")
     val comp = out.filter(_._1 == "component")
@@ -1353,7 +1354,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x74 SQ8 recall matches a driver-side brute-force recomputation") {
-    val out = TrainingData.defs("x74_sq8_recall")(spark, sf).collect()
+    val out = SparkEntry.queries("x74_sq8_recall")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(out.length == 5)
     out.foreach { case (q, m, rec) =>
@@ -1390,7 +1391,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x75 IVF balance: shares and imbalance reconcile with the census") {
-    val out = TrainingData.defs("x75_ivf_balance")(spark, sf).collect()
+    val out = SparkEntry.queries("x75_ivf_balance")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
     assert(out.nonEmpty && out.length <= 16)
     val total = out.map(_._2).sum
@@ -1406,7 +1407,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x76 vocab sketch: HLL estimate honors its bound on every source") {
-    val out = TrainingData.defs("x76_vocab_sketch")(spark, sf).collect()
+    val out = SparkEntry.queries("x76_vocab_sketch")(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
     assert(out.nonEmpty)
     out.foreach { case (src, nTok, nTypes, ok) =>
@@ -1416,7 +1417,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x77 soft dedup conserves corpus mass through the weights") {
-    val out = TrainingData.defs("x77_soft_dedup_weights")(spark, sf).collect()
+    val out = SparkEntry.queries("x77_soft_dedup_weights")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val corpusN = Tables.documents(spark, sf)
       .filter(col("doc_id") % 1000000 < 200).count() * 3
@@ -1428,13 +1429,13 @@ class EngineSpec extends AnyFunSuite {
       assert(math.abs(lw - math.log(w.toDouble + 1)) < 1e-5, s"doc $id log")
     }
     // survivors are exactly the x24 survivor set
-    val survivors = TrainingData.defs("x24_dedup_survivors")(spark, sf)
+    val survivors = SparkEntry.queries("x24_dedup_survivors")(spark, sf)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(out.map(_._1).toSet == survivors, "one weighted row per survivor")
   }
 
   test("x78 Gopher rules discriminate and reconcile with a recomputation") {
-    val out = TrainingData.defs("x78_gopher_rules")(spark, sf).collect()
+    val out = SparkEntry.queries("x78_gopher_rules")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3),
         r.getLong(4), r.getBoolean(5)))
     assert(out.nonEmpty)
@@ -1465,9 +1466,9 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x79 lang margin agrees with x7's decision, flags ambiguity") {
-    val out = TrainingData.defs("x79_lang_margin")(spark, sf).collect()
+    val out = SparkEntry.queries("x79_lang_margin")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getBoolean(3)))
-    val x7 = TrainingData.defs("x7_lang_id")(spark, sf).collect()
+    val x7 = SparkEntry.queries("x7_lang_id")(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(out.nonEmpty)
     out.foreach { case (id, lang, margin, amb) =>
@@ -1479,11 +1480,11 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x80 quality trend matches a driver-side exact-moment OLS") {
-    val out = TrainingData.defs("x80_quality_trend")(spark, sf).collect()
+    val out = SparkEntry.queries("x80_quality_trend")(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
         r.getDouble(3), r.getBoolean(4)))
     assert(out.nonEmpty)
-    val docs = TrainingData.defs("x8_quality_score")(spark, sf)
+    val docs = SparkEntry.queries("x8_quality_score")(spark, sf)
       .join(Tables.documents(spark, sf).select("doc_id", "source"), Seq("doc_id"))
       .select("source", "doc_id", "quality").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
@@ -1507,7 +1508,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x81 corpus card: checksum is order-free, entropy bounded, mass exact") {
-    val out = TrainingData.defs("x81_corpus_card")(spark, sf).collect()
+    val out = SparkEntry.queries("x81_corpus_card")(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getDouble(4), r.getDouble(5), r.getDouble(6), r.getLong(7)))
     assert(out.nonEmpty)
@@ -1535,7 +1536,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x82 percentile normalizes quality within each source") {
-    val out = TrainingData.defs("x82_quality_percentile")(spark, sf).collect()
+    val out = SparkEntry.queries("x82_quality_percentile")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getDouble(3),
         r.getBoolean(4)))
     assert(out.nonEmpty)
@@ -1593,7 +1594,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x106/x107 on the corpus: lossless segmentation, fertility bounds") {
-    val merges = TrainingData.trainBpeMerges(spark, sf)
+    val merges = TrainingDataLm.trainBpeMerges(spark, sf)
     assert(merges.nonEmpty && merges.map(_.step) == (1 to merges.length))
     // replaying the merges must reconstruct every distinct corpus word
     val sw = Tables.documents(spark, sf)
@@ -1609,7 +1610,7 @@ class EngineSpec extends AnyFunSuite {
       assert(r.getInt(2) >= 1 && r.getInt(2) <= r.getString(0).length)
     }
     // learned-vocab fertility strictly beats character-level (= word length)
-    val fert = TrainingData.defs("x107_bpe_segment")(spark, sf).collect()
+    val fert = SparkEntry.queries("x107_bpe_segment")(spark, sf).collect()
     fert.foreach { r =>
       val (nw, nsub, nsingle) = (r.getLong(1), r.getLong(2), r.getLong(3))
       assert(nsub >= nw && nsingle <= nw && r.getDouble(4) >= 1.0)
@@ -1697,7 +1698,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("x110 base-only store: build excludes the batch; frozen-codebook encode covers every batch id; audit totals reconcile") {
     import graft.ml.PqIndex
-    val p = TrainingData.ensureIvfPqBase(spark, sf)
+    val p = TrainingDataAnn.ensureIvfPqBase(spark, sf)
     val coarse = spark.read.parquet(s"$p/coarse")
     val pqc = spark.read.parquet(s"$p/pqcents")
     val emb = Tables.embeddings(spark, sf)
@@ -1722,7 +1723,7 @@ class EngineSpec extends AnyFunSuite {
     val fresh = PqIndex.encode(resEmb, pqc)
     assert(fresh.select("vec_id").distinct().count() == nBatch)
     // carrier totals reconcile with the slice sizes per subspace
-    val rows = TrainingData.defs("x110_ivfpq_addbatch")(spark, sf).collect()
+    val rows = SparkEntry.queries("x110_ivfpq_addbatch")(spark, sf).collect()
     val byM = rows.groupBy(_.getAs[Long]("m"))
     byM.values.foreach { g =>
       assert(g.map(_.getAs[Long]("n_base")).sum == nBase)
@@ -1731,10 +1732,10 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x111 alignment sweep: one curve per source, monotone, x104-consistent") {
-    val rows = TrainingData.defs("x111_alignment_score")(spark, sf)
+    val rows = SparkEntry.queries("x111_alignment_score")(spark, sf)
       .collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2),
         r.getLong(3), r.getDouble(4)))
-    val x104 = TrainingData.defs("x104_pairing_audit")(spark, sf)
+    val x104 = SparkEntry.queries("x104_pairing_audit")(spark, sf)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(rows.nonEmpty)
     rows.groupBy(_._1).foreach { case (src, curve) =>
@@ -1761,14 +1762,14 @@ class EngineSpec extends AnyFunSuite {
       (0 until 5).map(i => (i.toLong, 1L, Seq(1.0, 0.0, 1.0))) ++
       (5 until 10).map(i => (i.toLong, 0L, Seq(0.0, 1.0, 1.0)))
     val tf = rows.toDF("doc_id", "y", "xs")
-    val w = TrainingData.trainQualityClf(tf, 10, dFeat = 3)
+    val w = TrainingDataClassifier.trainQualityClf(tf, 10, dFeat = 3)
     assert(w(0) > 0 && w(1) < 0, s"signs: ${w.toSeq}")
     assert(w(0) > w(2) && w(2) > w(1), s"bias between: ${w.toSeq}")
     // every crafted doc classified correctly by the learned model
     assert(w(0) + w(2) > 0 && w(1) + w(2) <= 0)
     // corpus: the distilled model must beat the majority base rate
-    val (ctf, n) = TrainingData.qualityClfTf(spark, sf)
-    val cw = TrainingData.trainQualityClf(ctf, n)
+    val (ctf, n) = TrainingDataClassifier.qualityClfTf(spark, sf)
+    val cw = TrainingDataClassifier.trainQualityClf(ctf, n)
     val byDoc = ctf.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2)))
     val acc = byDoc.count { case (_, y, xs) =>
@@ -1785,9 +1786,9 @@ class EngineSpec extends AnyFunSuite {
     // posexplode gradient, 68-key aggregation) replayed over the same
     // checkpointed feature table; the production trainer now computes
     // the identical integers in one RDD aggregate per step
-    val (tf, n) = TrainingData.qualityClfTf(spark, sf)
+    val (tf, n) = TrainingDataClassifier.qualityClfTf(spark, sf)
     val dFeat = 68; val iters = 5; val eta = 16.0
-    val fast = TrainingData.trainQualityClfSteps(tf, n, dFeat, iters, eta)
+    val fast = TrainingDataClassifier.trainQualityClfSteps(tf, n, dFeat, iters, eta)
     var w = Array.fill(dFeat)(0.0)
     val ref = Seq.newBuilder[Array[Double]]
     for (_ <- 1 to iters) {
@@ -1815,8 +1816,8 @@ class EngineSpec extends AnyFunSuite {
 
   test("r12 EM fold: RDD lambda steps == former SQL aggregation, bit-for-bit") {
     import org.apache.spark.sql.functions._
-    val scored = TrainingData.emInterpScored(spark, sf)
-    val (fast, t) = TrainingData.emInterpLambdas(scored, iters = 3)
+    val scored = TrainingDataLm.emInterpScored(spark, sf)
+    val (fast, t) = TrainingDataLm.emInterpLambdas(scored, iters = 3)
     var l = Seq(0.25, 0.25, 0.25, 0.25)
     for (_ <- 1 to 3) {
       val den = lit(l(0)) * col("p0") + lit(l(1)) * col("p1") +
@@ -1912,16 +1913,16 @@ class EngineSpec extends AnyFunSuite {
     // snaps broadcast + interpreted zip_with/aggregate folds) replayed
     // over the same feature table; the production consumers now
     // compute the identical integers in one task-side compiled fold
-    val traj = spark.read.parquet(TrainingData.ensureClfTrajectory(spark, sf))
-    val (tf, _) = TrainingData.qualityClfTf(spark, sf)
-    val ref = tf.crossJoin(broadcast(TrainingData.trajRow(traj)))
+    val traj = spark.read.parquet(TrainingDataClassifier.ensureClfTrajectory(spark, sf))
+    val (tf, _) = TrainingDataClassifier.qualityClfTf(spark, sf)
+    val ref = tf.crossJoin(broadcast(TrainingDataClassifier.trajRow(traj)))
       .withColumn("ptqs",
-        TrainingData.trajPtqs(col("snaps"), col("xs"), col("y")))
+        TrainingDataClassifier.trajPtqs(col("snaps"), col("xs"), col("y")))
       .select(col("doc_id"), col("y"), col("ptqs"))
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getSeq[Long](2).toVector)))
       .toMap
-    val fast = TrainingData.trajPqRows(tf, traj).collect()
+    val fast = TrainingDataClassifier.trajPqRows(tf, traj).collect()
       .map { case (docId, y, _, pqs) =>
         val ptqs = pqs.toVector.map(pq => if (y == 1L) pq else 1000000L - pq)
         docId -> ((y, ptqs))
@@ -1933,7 +1934,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x113 CCNet buckets: per-lang terciles, ordered by perplexity") {
-    val rows = TrainingData.defs("x113_ppl_buckets")(spark, sf)
+    val rows = SparkEntry.queries("x113_ppl_buckets")(spark, sf)
       .collect().map(r => (r.getString(1), r.getDouble(2), r.getString(3)))
     assert(rows.nonEmpty)
     rows.groupBy(_._1).foreach { case (lang, docs) =>
@@ -1960,7 +1961,7 @@ class EngineSpec extends AnyFunSuite {
     // boundaries re-align at the first hash boundary past the edit
     val a = (1 to 150).map(i => s"t$i").mkString(" ")
     val docs = Seq((1L, a), (2L, "zzz " + a)).toDF("doc_id", "text")
-    val fps = TrainingData.cdcChunkRows(docs).collect()
+    val fps = TrainingDataDedup.cdcChunkRows(docs).collect()
       .groupBy(_.getLong(0)).view
       .mapValues(_.map(_.getString(2)).toSet).toMap
     val shared = fps(1L).intersect(fps(2L))
@@ -1972,7 +1973,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x115 frozen-vocab drift: OOV fires, fertility degrades vs self-trained") {
-    val drift = TrainingData.defs("x115_bpe_drift")(spark, sf)
+    val drift = SparkEntry.queries("x115_bpe_drift")(spark, sf)
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(4), r.getDouble(5), r.getDouble(6))).toMap
     assert(drift.nonEmpty)
@@ -1984,7 +1985,7 @@ class EngineSpec extends AnyFunSuite {
     }
     // same sources under the full self-trained vocab (x107): the
     // frozen tight tokenizer can only be as good or worse
-    val self = TrainingData.defs("x107_bpe_segment")(spark, sf)
+    val self = SparkEntry.queries("x107_bpe_segment")(spark, sf)
       .collect().map(r => r.getString(0) -> r.getDouble(4)).toMap
     drift.foreach { case (src, (_, _, fert, _)) =>
       assert(fert >= self(src), s"$src frozen $fert vs self ${self(src)}")
@@ -1992,7 +1993,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x114 OPQ serving store: frozen rotation, full top-10 per query") {
-    val path = TrainingData.ensureOpqPqStore(spark, sf)
+    val path = TrainingDataAnn.ensureOpqPqStore(spark, sf)
     // the persisted rotation is the serving contract: square, and
     // bit-identical to a fresh driver-side recompute
     val stored = spark.read.parquet(s"$path/rot").orderBy(col("o"))
@@ -2002,7 +2003,7 @@ class EngineSpec extends AnyFunSuite {
     val fresh = graft.ml.Opq.rotationRows(
       graft.ml.Opq.eigensolve(mat, mat.length), m = 8, dsub = 8)
     stored.zip(fresh).foreach { case (a, b) => assert(a.sameElements(b)) }
-    val rows = TrainingData.defs("x114_opq_serve")(spark, sf)
+    val rows = SparkEntry.queries("x114_opq_serve")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getInt(3)))
     // 5 queries × a full ADC top-10 each, ranks dense from 1
     assert(rows.length == 50)
@@ -2021,7 +2022,7 @@ class EngineSpec extends AnyFunSuite {
       (1L, "s", s"p1 p2 p3 $x $x"),   // within-doc dup: 2nd x-window drops
       (2L, "s", s"p1 p2 p3 $x $y"))   // shares banner+pad+x with doc 1
       .toDF("doc_id", "source", "text")
-    val got = TrainingData.firstOccDedup(docs)
+    val got = TrainingDataDedup.firstOccDedup(docs)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getString(3), r.getLong(4))).toMap
     // doc 1: 4 segments, only the repeated x-window drops; doc 2 keeps
@@ -2035,12 +2036,12 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x118 calibration: bins partition the scored corpus, means sit inside their bin, store ≡ fresh training") {
-    val rows = TrainingData.defs("x118_clf_calibration")(spark, sf)
+    val rows = SparkEntry.queries("x118_clf_calibration")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getDouble(3), r.getDouble(4)))
     assert(rows.nonEmpty)
     // bins partition exactly the trainer's scored population
-    val (tf, n) = TrainingData.qualityClfTf(spark, sf)
+    val (tf, n) = TrainingDataClassifier.qualityClfTf(spark, sf)
     assert(rows.map(_._2).sum == n)
     tf.unpersist()
     rows.foreach { case (bin, nd, mp, pr, gap) =>
@@ -2053,11 +2054,11 @@ class EngineSpec extends AnyFunSuite {
     }
     // the registry copy is the fresh training, bit-for-bit at 6dp
     val stored = spark.read
-      .parquet(TrainingData.ensureClfWeights(spark, sf))
+      .parquet(TrainingDataClassifier.ensureClfWeights(spark, sf))
       .collect().map(r => r.getLong(0) ->
         BigDecimal(r.getDouble(1)).setScale(6, BigDecimal.RoundingMode.HALF_UP))
       .toMap
-    val fresh = TrainingData.defs("x108_quality_classifier")(spark, sf)
+    val fresh = SparkEntry.queries("x108_quality_classifier")(spark, sf)
       .collect().map(r => r.getLong(0) -> BigDecimal(r.getDouble(1))).toMap
     assert(stored.keySet == fresh.keySet)
     fresh.foreach { case (b, w) =>
@@ -2066,7 +2067,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x119 semantic leakage: val/test rows, cell-bounded count ≤ brute-force count") {
-    val rows = TrainingData.defs("x119_semantic_leakage")(spark, sf)
+    val rows = SparkEntry.queries("x119_semantic_leakage")(spark, sf)
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     assert(rows.keySet == Set("val", "test"))
@@ -2095,9 +2096,9 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x120 hard negatives: family exclusion holds, ranking is contiguous and monotone") {
-    val labels = TrainingData.defs("x35_semantic_dedup")(spark, sf)
+    val labels = SparkEntry.queries("x35_semantic_dedup")(spark, sf)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val rows = TrainingData.defs("x120_hard_negatives")(spark, sf)
+    val rows = SparkEntry.queries("x120_hard_negatives")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3)))
     assert(rows.nonEmpty)
@@ -2117,9 +2118,9 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x121 pack boundary audit reconciles with x25's packing report") {
-    val packs = TrainingData.defs("x25_pack_sequences")(spark, sf)
+    val packs = SparkEntry.queries("x25_pack_sequences")(spark, sf)
       .collect().map(r => (r.getString(0), r.getLong(3)))
-    val audit = TrainingData.defs("x121_pack_boundary")(spark, sf)
+    val audit = SparkEntry.queries("x121_pack_boundary")(spark, sf)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getDouble(5)))
     assert(audit.nonEmpty)
@@ -2162,9 +2163,9 @@ class EngineSpec extends AnyFunSuite {
     }
     // 1) fixture-wide: the Column-expression DP is the reference DP
     val docs = Tables.documents(spark, sf)
-    val scores = TrainingData.unigramPieceScores(docs)
+    val scores = TrainingDataLm.unigramPieceScores(docs)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val dict = TrainingData.viterbiDict(docs)
+    val dict = TrainingDataLm.viterbiDict(docs)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     assert(dict.nonEmpty)
     dict.foreach { case (w, np, wq) =>
@@ -2177,9 +2178,9 @@ class EngineSpec extends AnyFunSuite {
     // the frequent 'ab'+'cd' split scores strictly higher
     val crafted = Seq((1L, ("ab " * 50) + ("cd " * 50) + "abcd"))
       .toDF("doc_id", "text")
-    val csc = TrainingData.unigramPieceScores(crafted)
+    val csc = TrainingDataLm.unigramPieceScores(crafted)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val cd = TrainingData.viterbiDict(crafted)
+    val cd = TrainingDataLm.viterbiDict(crafted)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     val (np4, wq4) = cd("abcd")
     assert(np4 == 2L, s"'abcd' should split as ab|cd, got $np4 pieces")
@@ -2189,7 +2190,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x117 per-source report: fertility and NLL invariants") {
-    val rows = TrainingData.defs("x117_unigram_viterbi")(spark, sf)
+    val rows = SparkEntry.queries("x117_unigram_viterbi")(spark, sf)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4)))
     assert(rows.nonEmpty)
@@ -2202,11 +2203,11 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x122 filter application: funnel reconciles with the scored population, distillation agrees with the rule gate") {
-    val rows = TrainingData.defs("x122_clf_filter")(spark, sf)
+    val rows = SparkEntry.queries("x122_clf_filter")(spark, sf)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getLong(4)))
     assert(rows.nonEmpty)
-    val (tf, n) = TrainingData.qualityClfTf(spark, sf)
+    val (tf, n) = TrainingDataClassifier.qualityClfTf(spark, sf)
     assert(rows.map(_._2).sum == n, "per-source docs must cover every scored doc")
     tf.unpersist()
     rows.foreach { case (src, nd, nk, kr, na) =>
@@ -2220,7 +2221,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x123 scaling curve: monotone in merge depth, k=50 ≡ x107, staged ≡ prefix replay") {
-    val rows = TrainingData.defs("x123_bpe_scaling")(spark, sf)
+    val rows = SparkEntry.queries("x123_bpe_scaling")(spark, sf)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3)))
     assert(rows.nonEmpty)
@@ -2233,13 +2234,13 @@ class EngineSpec extends AnyFunSuite {
         s"$src fertility not monotone: ${byK.map(_._4)}")
     }
     // the curve's k=50 endpoint IS x107's report
-    val x107 = TrainingData.defs("x107_bpe_segment")(spark, sf)
+    val x107 = SparkEntry.queries("x107_bpe_segment")(spark, sf)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     rows.filter(_._2 == 50L).foreach { case (src, _, nw, nsub) =>
       assert((nw, nsub) == x107(src), s"$src k=50 disagrees with x107")
     }
     // staged snapshots ≡ an independent prefix replay at k=10
-    val merges = TrainingData.trainBpeMerges(spark, sf).map(m => (m.lhs, m.rhs))
+    val merges = TrainingDataLm.trainBpeMerges(spark, sf).map(m => (m.lhs, m.rhs))
     val words = Tables.documents(spark, sf)
       .select(explode(split(trim(lower(col("text"))), "\\s+")).as("w"))
       .filter(col("w") =!= "").distinct()
@@ -2253,7 +2254,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("x124 b-bit minwise: low-bit agreement dominates full agreement; exact copies read zero error") {
     import spark.implicits._
-    val rows = TrainingData.defs("x124_bbit_minhash")(spark, sf)
+    val rows = SparkEntry.queries("x124_bbit_minhash")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getDouble(4), r.getDouble(5)))
     assert(rows.nonEmpty)
@@ -2275,7 +2276,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x125 JL projection: unbiased distortion, ordered spread, bounded recall") {
-    val rows = TrainingData.defs("x125_jl_projection")(spark, sf)
+    val rows = SparkEntry.queries("x125_jl_projection")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getDouble(3), r.getDouble(4), r.getDouble(5)))
     assert(rows.nonEmpty)
@@ -2326,7 +2327,7 @@ class EngineSpec extends AnyFunSuite {
     // item 3 — no doc_id sliver): one row per fixture doc, density
     // within the winnowing bounds, and the fan-in column live (the
     // 31-word fixture vocabulary guarantees shared runs exist)
-    val rows = TrainingData.defs("x126_winnowing")(spark, sf)
+    val rows = SparkEntry.queries("x126_winnowing")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getLong(4)))
     assert(rows.size == Tables.documents(spark, sf).count())
@@ -2339,7 +2340,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x127 EM interpolation: held-out likelihood is monotone, carrier ≡ driver replica") {
-    val scoredDf = TrainingData.emInterpScored(spark, sf)
+    val scoredDf = TrainingDataLm.emInterpScored(spark, sf)
     val rows = scoredDf.collect().map(r =>
       (r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
     scoredDf.unpersist()
@@ -2362,7 +2363,7 @@ class EngineSpec extends AnyFunSuite {
       }
       l = (0 to 3).map(o => sums(o).toDouble / (t.toDouble * 1e6))
     }
-    val got = TrainingData.defs("x127_em_interpolation")(spark, sf)
+    val got = SparkEntry.queries("x127_em_interpolation")(spark, sf)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(got.keySet == Set("uniform", "unigram", "bigram", "trigram"))
     val want = Seq("uniform", "unigram", "bigram", "trigram").zip(l).toMap
@@ -2385,7 +2386,7 @@ class EngineSpec extends AnyFunSuite {
     val docs = Seq(
       (1L, "u1 u2 u3 s1 s2 s3 s4 s5 s6 u4 u5 u6"),
       (2L, "v1 s1 s2 s3 s4 s5 s6 v2 v3 v4 v5 v6 v7")).toDF("doc_id", "text")
-    val got = TrainingData.exactSubstringDedup(docs, 5).collect()
+    val got = TrainingDataDedup.exactSubstringDedup(docs, 5).collect()
       .map(r => r.getLong(0) -> r).toMap
     assert(got(1L).getAs[Long]("n_dup_tok") == 6)
     assert(got(1L).getAs[Long]("n_spans") == 1)
@@ -2399,7 +2400,7 @@ class EngineSpec extends AnyFunSuite {
     // fixture: the 11-token boilerplate tail (+ per-source head) is
     // duplicated across every doc, so every doc loses ≥ 13 tokens in
     // one leading span; and the rebuild must account for every token
-    val rows = TrainingData.defs("x137_exact_substring")(spark, sf).collect()
+    val rows = SparkEntry.queries("x137_exact_substring")(spark, sf).collect()
     assert(rows.length >= 100)
     rows.foreach { r =>
       assert(r.getAs[Long]("n_dup_tok") >= 13, s"doc ${r.getLong(0)}")
@@ -2419,7 +2420,7 @@ class EngineSpec extends AnyFunSuite {
     val words = Seq("abab", "ba").toDF("w")
     val scores = Seq(("ab", -10000L), ("a", -100000L), ("b", -100000L),
       ("ba", -15000L)).toDF("p", "sq")
-    val dec = TrainingData.unigramDecode(words, scores).collect()
+    val dec = TrainingDataLm.unigramDecode(words, scores).collect()
       .map(r => r.getString(0) -> ((r.getSeq[String](1), r.getLong(2),
         r.getLong(3)))).toMap
     assert(dec("abab")._1 == Seq("ab", "ab"), s"got ${dec("abab")._1}")
@@ -2428,7 +2429,7 @@ class EngineSpec extends AnyFunSuite {
     // corpus: Viterbi-EM's objective J(θ_t) = Σ f·wq must ascend, up
     // to the M-step's per-piece 1-quantum rounding (≤ 16 quanta per
     // word token — the documented slack)
-    val (_, counts, js) = TrainingData.emUnigramCounts(spark, sf, 3)
+    val (_, counts, js) = TrainingDataLm.emUnigramCounts(spark, sf, 3)
     assert(js.size == 3)
     val totalF = Tables.documents(spark, sf)
       .select(explode(graft.text.TextFunctions.wsTokens(
@@ -2443,7 +2444,7 @@ class EngineSpec extends AnyFunSuite {
     assert(js(1) > js(0), s"EM step 1 did not improve J: ${js(0)} -> ${js(1)}")
     assert(counts.collect().forall(_.getLong(1) > 0))
     // carrier: vocab = all single chars + at most 16 multi-char pieces
-    val rows = TrainingData.defs("x135_unigram_em")(spark, sf).collect()
+    val rows = SparkEntry.queries("x135_unigram_em")(spark, sf).collect()
     assert(rows.nonEmpty)
     val nChars = Tables.documents(spark, sf)
       .select(explode(split(lower(col("text")), "")).as("c"))
@@ -2457,11 +2458,11 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x136 temperature scaling: grid argmin ≡ store, NLL(T*) ≤ NLL(1), ECE does not regress") {
-    val grid = TrainingData.clfTempGrid(spark, sf).collect()
+    val grid = TrainingDataClassifier.clfTempGrid(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(grid.map(_._1).toSet == (25L until 401L by 5).toSet)
     val (tqStar, snllStar) = grid.minBy { case (tq, snll) => (snll, tq) }
-    val st = spark.read.parquet(TrainingData.ensureClfTemp(spark, sf))
+    val st = spark.read.parquet(TrainingDataClassifier.ensureClfTemp(spark, sf))
       .collect()
     assert(st.length == 1, "temperature store must hold exactly one row")
     assert(st(0).getLong(0) == tqStar && st(0).getLong(1) == snllStar,
@@ -2471,12 +2472,12 @@ class EngineSpec extends AnyFunSuite {
     val snll1 = grid.find(_._1 == 100L).get._2
     assert(snllStar <= snll1, s"fitted NLL $snllStar > uncalibrated $snll1")
     // ECE before/after on the fit split, from the exact quantized scores
-    val wdf = spark.read.parquet(TrainingData.ensureClfWeights(spark, sf))
+    val wdf = spark.read.parquet(TrainingDataClassifier.ensureClfWeights(spark, sf))
     val valDocs = Tables.documents(spark, sf).filter(
       pmod(conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
         .cast("long"), lit(100L)).between(90, 94))
-    val vz = TrainingData.clfLogits(
-        TrainingData.clfFeatures(valDocs), wdf)
+    val vz = TrainingDataClassifier.clfLogits(
+        TrainingDataClassifier.clfFeatures(valDocs), wdf)
       .collect().map(r => (r.getLong(1), r.getLong(2)))
     assert(vz.nonEmpty, "val split empty — fixture too small for the fit")
     def pq(zq: Long, tq: Long): Long =
@@ -2493,7 +2494,7 @@ class EngineSpec extends AnyFunSuite {
     assert(ece(tqStar) <= ece(100L) + 1e-12,
       s"ECE after ${ece(tqStar)} > before ${ece(100L)}")
     // the carrier emits the fitted T on every row
-    val rows = TrainingData.defs("x136_temp_scaling")(spark, sf).collect()
+    val rows = SparkEntry.queries("x136_temp_scaling")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(math.abs(r.getAs[Double]("t") - tqStar / 100.0) < 1e-9)
@@ -2502,9 +2503,9 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x138 ROC: AUC ≡ driver midrank recount, curves monotone, endpoints exact") {
-    val wdf = spark.read.parquet(TrainingData.ensureClfWeights(spark, sf))
-    val (tf, _) = TrainingData.qualityClfTf(spark, sf)
-    val scored = TrainingData.clfScores(tf, wdf).collect()
+    val wdf = spark.read.parquet(TrainingDataClassifier.ensureClfWeights(spark, sf))
+    val (tf, _) = TrainingDataClassifier.qualityClfTf(spark, sf)
+    val scored = TrainingDataClassifier.clfScores(tf, wdf).collect()
       .map(r => (r.getLong(1), r.getLong(2)))
     val pos = scored.filter(_._1 == 1L).map(_._2)
     val neg = scored.filter(_._1 == 0L).map(_._2)
@@ -2514,7 +2515,7 @@ class EngineSpec extends AnyFunSuite {
     def q6(num: BigInt, den: BigInt): Double =
       ((2 * num * 1000000 + den) / (2 * den)).toDouble / 1e6
     val aucWant = q6(BigInt(u2), BigInt(2) * pos.length * neg.length)
-    val rows = TrainingData.defs("x138_clf_roc")(spark, sf).collect()
+    val rows = SparkEntry.queries("x138_clf_roc")(spark, sf).collect()
       .sortBy(_.getLong(0))
     assert(rows.length == 11)
     rows.foreach { r =>
@@ -2536,14 +2537,14 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x139 uncertainty sampling: budget respected, cut ≡ driver nearest-rank replay") {
-    val wdf = spark.read.parquet(TrainingData.ensureClfWeights(spark, sf))
-    val (tf, _) = TrainingData.qualityClfTf(spark, sf)
-    val margins = TrainingData.clfScores(tf, wdf).collect()
+    val wdf = spark.read.parquet(TrainingDataClassifier.ensureClfWeights(spark, sf))
+    val (tf, _) = TrainingDataClassifier.qualityClfTf(spark, sf)
+    val margins = TrainingDataClassifier.clfScores(tf, wdf).collect()
       .map(r => math.abs(r.getLong(2) - 500000L)).sorted
     val n = margins.length
     // nearest-rank 5th percentile: smallest mg with cum·20 ≥ n
     val cutWant = margins((n + 19) / 20 - 1)
-    val rows = TrainingData.defs("x139_uncertainty_sample")(spark, sf)
+    val rows = SparkEntry.queries("x139_uncertainty_sample")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -2559,7 +2560,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x141 waterfilling: budget met exactly, caps respected, unsaturated allocs within 1") {
-    val rows = TrainingData.defs("x141_unimax_alloc")(spark, sf).collect()
+    val rows = SparkEntry.queries("x141_unimax_alloc")(spark, sf).collect()
     assert(rows.nonEmpty)
     val totTok = rows.map(_.getAs[Long]("n_tok")).sum
     val b = totTok / 2
@@ -2585,9 +2586,9 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x142 label noise: thresholds ≡ driver replay, flags are the confident off-diagonal") {
-    val wdf = spark.read.parquet(TrainingData.ensureClfWeights(spark, sf))
-    val (tf, _) = TrainingData.qualityClfTf(spark, sf)
-    val scored = TrainingData.clfScores(tf, wdf).collect()
+    val wdf = spark.read.parquet(TrainingDataClassifier.ensureClfWeights(spark, sf))
+    val (tf, _) = TrainingDataClassifier.qualityClfTf(spark, sf)
+    val scored = TrainingDataClassifier.clfScores(tf, wdf).collect()
       .map(r => (r.getLong(1), r.getLong(2)))
     def meanQ(vs: Seq[Long]): Long =
       ((2 * BigInt(vs.sum) + vs.length) / (2 * BigInt(vs.length))).toLong
@@ -2595,7 +2596,7 @@ class EngineSpec extends AnyFunSuite {
     val t0 = meanQ(scored.filter(_._1 == 0L).map(_._2).map(1000000L - _).toSeq)
     val want0to1 = scored.count { case (y, pq) => y == 0L && pq >= t1 }
     val want1to0 = scored.count { case (y, pq) => y == 1L && 1000000L - pq >= t0 }
-    val rows = TrainingData.defs("x142_label_noise")(spark, sf).collect()
+    val rows = SparkEntry.queries("x142_label_noise")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(math.abs(r.getAs[Double]("t1") - t1 / 1e6) < 1e-9)
@@ -2614,7 +2615,7 @@ class EngineSpec extends AnyFunSuite {
       .select(col("source"), tokenCount(col("text")).cast("long"))
       .collect().map(r => (r.getString(0), r.getLong(1)))
       .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val rows = TrainingData.defs("x165_truncation_loss")(spark, sf)
+    val rows = SparkEntry.queries("x165_truncation_loss")(spark, sf)
       .collect()
     assert(rows.length == lens.size * 3)
     rows.foreach { r =>
@@ -2642,7 +2643,7 @@ class EngineSpec extends AnyFunSuite {
         (1.0 + 3.8416 / nD)
       LogFit.qScaled(lb, 1e4).toDouble / 1e4
     }
-    val rows = TrainingData.defs("x164_wilson_bound")(spark, sf).collect()
+    val rows = SparkEntry.queries("x164_wilson_bound")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val n = r.getAs[Long]("n_docs"); val k = r.getAs[Long]("n_kept")
@@ -2661,15 +2662,15 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x163 kappa: chance correction bites on skewed sources; replica agrees") {
-    val wdf = spark.read.parquet(TrainingData.ensureClfWeights(spark, sf))
-    val (tf, _) = TrainingData.qualityClfTf(spark, sf)
-    val scored = TrainingData.clfScores(tf, wdf)
+    val wdf = spark.read.parquet(TrainingDataClassifier.ensureClfWeights(spark, sf))
+    val (tf, _) = TrainingDataClassifier.qualityClfTf(spark, sf)
+    val scored = TrainingDataClassifier.clfScores(tf, wdf)
       .join(Tables.documents(spark, sf).select(col("doc_id"), col("source")),
         Seq("doc_id"))
       .select(col("source"), col("y"), col("pq")).collect()
       .map(r => (r.getString(0), r.getLong(1),
         if (r.getLong(2) >= 500000L) 1L else 0L))
-    val rows = TrainingData.defs("x163_cohen_kappa")(spark, sf).collect()
+    val rows = SparkEntry.queries("x163_cohen_kappa")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val src = r.getAs[String]("source")
@@ -2698,7 +2699,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("x162 Neyman: budget landed exactly; allocation tracks N_h·sigma_h; replica agrees") {
     import graft.text.TextFunctions._
-    val rows = TrainingData.defs("x162_neyman_alloc")(spark, sf).collect()
+    val rows = SparkEntry.queries("x162_neyman_alloc")(spark, sf).collect()
     assert(rows.nonEmpty)
     assert(rows.map(_.getAs[Long]("alloc")).sum == 1000L,
       "largest-remainder rounding must land the budget exactly")
@@ -2749,7 +2750,7 @@ class EngineSpec extends AnyFunSuite {
         (id, w, LogFit.qScaled(math.log(u) / w.toDouble, 1e6))
       }
     val want = docs.sortBy { case (id, _, k) => (-k, id) }.take(50)
-    val got = TrainingData.defs("x161_weighted_reservoir")(spark, sf)
+    val got = SparkEntry.queries("x161_weighted_reservoir")(spark, sf)
       .collect()
     assert(got.length == math.min(50, docs.length))
     got.zip(want).foreach { case (g, (id, w, k)) =>
@@ -2776,7 +2777,7 @@ class EngineSpec extends AnyFunSuite {
           .map(w => (r.getString(0), w))
       }.distinct
     val bySource = pairs.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val rows = TrainingData.defs("x160_kmv_distinct")(spark, sf).collect()
+    val rows = SparkEntry.queries("x160_kmv_distinct")(spark, sf).collect()
     assert(rows.length == bySource.size)
     rows.foreach { r =>
       val words = bySource(r.getAs[String]("source"))
@@ -2798,13 +2799,13 @@ class EngineSpec extends AnyFunSuite {
 
   test("x159 TracIn: full driver replica reproduces the top-20 self-influence queue") {
     import graft.ml.LogFit
-    val trajW = spark.read.parquet(TrainingData.ensureClfTrajectory(spark, sf))
+    val trajW = spark.read.parquet(TrainingDataClassifier.ensureClfTrajectory(spark, sf))
       .collect().groupBy(_.getLong(0)).view.mapValues { rs =>
         val w = Array.fill(68)(0.0)
         rs.foreach(r => w(r.getLong(1).toInt) = r.getDouble(2))
         w
       }.toMap
-    val (tf, _) = TrainingData.qualityClfTf(spark, sf)
+    val (tf, _) = TrainingDataClassifier.qualityClfTf(spark, sf)
     val rows = tf.select("doc_id", "y", "xs").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2)))
     val si = rows.map { case (doc, y, xs) =>
@@ -2822,7 +2823,7 @@ class EngineSpec extends AnyFunSuite {
       (doc, y, (2 * (16L * a6 * b6) + 1000000L) / 2000000L)
     }.toSeq
     val want = si.sortBy { case (doc, _, s) => (-s, doc) }.take(20)
-    val got = TrainingData.defs("x159_tracin_self")(spark, sf).collect()
+    val got = SparkEntry.queries("x159_tracin_self")(spark, sf).collect()
     assert(got.length == want.length)
     got.zip(want).foreach { case (g, (doc, y, s)) =>
       assert(g.getAs[Long]("doc_id") == doc, s"rank ${g.getAs[Long]("rk")}")
@@ -2832,10 +2833,10 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x158 forgetting: never-learned/unforgettable/forgotten partition each label exactly") {
-    val rows = TrainingData.defs("x158_forgetting_events")(spark, sf)
+    val rows = SparkEntry.queries("x158_forgetting_events")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
-    val (tf, _) = TrainingData.qualityClfTf(spark, sf)
+    val (tf, _) = TrainingDataClassifier.qualityClfTf(spark, sf)
     val nDocs = tf.select("doc_id").distinct().count()
     assert(rows.map(_.getAs[Long]("n_docs")).sum == nDocs)
     rows.foreach { r =>
@@ -2854,19 +2855,19 @@ class EngineSpec extends AnyFunSuite {
   test("x157 cartography: trajectory snapshots replay; regions partition the corpus") {
     // the persisted trajectory is exactly the trainer's snapshots —
     // step 20 must equal the serving registry bit-for-bit
-    val traj = spark.read.parquet(TrainingData.ensureClfTrajectory(spark, sf))
+    val traj = spark.read.parquet(TrainingDataClassifier.ensureClfTrajectory(spark, sf))
     val steps = traj.select("step").distinct().collect()
       .map(_.getLong(0)).sorted
     assert(steps.toSeq == (1L to 20L))
     val w20 = traj.filter(col("step") === 20L)
       .select("bucket", "wb").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val reg = spark.read.parquet(TrainingData.ensureClfWeights(spark, sf))
+    val reg = spark.read.parquet(TrainingDataClassifier.ensureClfWeights(spark, sf))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(w20 == reg, "final snapshot must equal the serving registry")
-    val rows = TrainingData.defs("x157_cartography")(spark, sf).collect()
+    val rows = SparkEntry.queries("x157_cartography")(spark, sf).collect()
     assert(rows.nonEmpty)
-    val (tf, _) = TrainingData.qualityClfTf(spark, sf)
+    val (tf, _) = TrainingDataClassifier.qualityClfTf(spark, sf)
     val nDocs = tf.select("doc_id").distinct().count()
     assert(rows.map(_.getAs[Long]("n_docs")).sum == nDocs,
       "regions must partition every doc exactly once")
@@ -2888,7 +2889,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x156 repeat value: D_eff monotone to the U·(1+R*) asymptote, efficiency decays from 1") {
-    val rows = TrainingData.defs("x156_repeat_value")(spark, sf).collect()
+    val rows = SparkEntry.queries("x156_repeat_value")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.groupBy(_.getAs[String]("source")).foreach { case (_, rs) =>
       val byE = rs.sortBy(_.getAs[Long]("epochs"))
@@ -2917,7 +2918,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("x155 SGT: seen mass renormalizes to 1−P0; switch is a clean prefix; estimates positive") {
     import graft.text.TextFunctions._
-    val rows = TrainingData.defs("x155_sgt_smoothing")(spark, sf)
+    val rows = SparkEntry.queries("x155_sgt_smoothing")(spark, sf)
       .collect().sortBy(_.getAs[Long]("r"))
     assert(rows.nonEmpty)
     val counts = Tables.documents(spark, sf)
@@ -2959,11 +2960,11 @@ class EngineSpec extends AnyFunSuite {
     assert(f.interceptQ == ln3q)
     assert(LogFit.r2Q(pts, f).contains(1000000L))
     // Heaps carrier ≡ independent replay off x67's curve
-    val curve = TrainingData.defs("x67_vocab_growth")(spark, sf)
+    val curve = SparkEntry.queries("x67_vocab_growth")(spark, sf)
       .select(col("cum_tok"), col("cum_types")).collect()
     val hw = LogFit.fit(curve.map(r => (LogFit.lq(r.getLong(0).toDouble),
       LogFit.lq(r.getLong(1).toDouble))).toSeq)
-    val heaps = TrainingData.defs("x153_heaps_fit")(spark, sf).collect()
+    val heaps = SparkEntry.queries("x153_heaps_fit")(spark, sf).collect()
     assert(heaps.length == 1)
     assert(heaps(0).getAs[Double]("beta") == hw.slopeQ.toDouble / 1e6)
     assert(heaps(0).getAs[Double]("ln_k") == hw.interceptQ.toDouble / 1e6)
@@ -2976,7 +2977,7 @@ class EngineSpec extends AnyFunSuite {
     assert(heaps(0).getAs[Double]("v_pred_10x") >=
       curve.map(_.getLong(1)).max.toDouble * 0.5)
     // Zipf carrier: decreasing head, meaningful linear fit
-    val zipf = TrainingData.defs("x154_zipf_fit")(spark, sf).collect()
+    val zipf = SparkEntry.queries("x154_zipf_fit")(spark, sf).collect()
     assert(zipf.length == 1)
     assert(zipf(0).getAs[Long]("n_points") == 30L ||
       zipf(0).getAs[Long]("n_points") > 0)
@@ -2987,7 +2988,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x152 quality survivor: keeper is the exact per-cluster quality argmax") {
-    val rows = TrainingData.defs("x152_quality_survivor")(spark, sf)
+    val rows = SparkEntry.queries("x152_quality_survivor")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     // independent replay: cluster membership + per-doc quality argmax
@@ -3004,7 +3005,7 @@ class EngineSpec extends AnyFunSuite {
           Seq("the", "a", "of", "and")) * 1e4, 0).cast("long").as("q4"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val labels = graft.dedup.NearDup.clusters(withDupes,
-        TrainingData.defs("x4_ngram_jaccard")(spark, sf))
+        SparkEntry.queries("x4_ngram_jaccard")(spark, sf))
       .select(col("doc_id"), col("canonico")).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val byCluster = labels.groupBy(_._2).view.mapValues(_.map(_._1)).toMap
@@ -3034,7 +3035,7 @@ class EngineSpec extends AnyFunSuite {
     val fof = counts.values.groupBy(identity).view
       .mapValues(_.size.toLong).toMap
     val total = counts.values.sum
-    val rows = TrainingData.defs("x151_good_turing")(spark, sf).collect()
+    val rows = SparkEntry.queries("x151_good_turing")(spark, sf).collect()
     assert(rows.length == fof.size + 1)
     val byR = rows.map(r => r.getAs[Long]("r") -> r).toMap
     fof.foreach { case (r, nr) =>
@@ -3067,15 +3068,15 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x150 EL2N: cut replayed driver-side; pruned mass is the easy-confident fifth") {
-    val wdf = spark.read.parquet(TrainingData.ensureClfWeights(spark, sf))
-    val (tf, _) = TrainingData.qualityClfTf(spark, sf)
-    val el2n = TrainingData.clfScores(tf, wdf).collect()
+    val wdf = spark.read.parquet(TrainingDataClassifier.ensureClfWeights(spark, sf))
+    val (tf, _) = TrainingDataClassifier.qualityClfTf(spark, sf)
+    val el2n = TrainingDataClassifier.clfScores(tf, wdf).collect()
       .map(r => math.abs(r.getLong(2) - r.getLong(1) * 1000000L)).sorted
     val n = el2n.length
     val cut = el2n.find(v => el2n.count(_ <= v) * 5 >= n).get
     val wantPruned = el2n.count(_ < cut)
     assert(wantPruned * 5 < n, "strictly-below-cut pruning stays under 20%")
-    val rows = TrainingData.defs("x150_el2n_prune")(spark, sf).collect()
+    val rows = SparkEntry.queries("x150_el2n_prune")(spark, sf).collect()
     assert(rows.nonEmpty)
     assert(rows.map(_.getAs[Long]("n_docs")).sum == n.toLong)
     assert(rows.map(_.getAs[Long]("n_pruned")).sum == wantPruned.toLong)
@@ -3099,7 +3100,7 @@ class EngineSpec extends AnyFunSuite {
       (200L, (1 to 20).map(i => s"f$i").mkString(" "))).toDF("doc_id", "text")
     val pool = Seq((1L, "xx yy xx yy xx yy"), (2L, "pp qq rr ss"))
       .toDF("doc_id", "text")
-    val red = TrainingData.rholossRedQ(pool, train).collect()
+    val red = TrainingDataMixture.rholossRedQ(pool, train).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(red(1L) > red(2L),
       s"structured doc must out-score gibberish: $red")
@@ -3108,7 +3109,7 @@ class EngineSpec extends AnyFunSuite {
     val balde = pmod(
       conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
         .cast("long"), lit(100L))
-    val scores = TrainingData.rholossRedQ(docs.filter(balde >= 90),
+    val scores = TrainingDataMixture.rholossRedQ(docs.filter(balde >= 90),
         docs.filter(balde < 90))
       .collect().map(_.getLong(1)).sorted
     val n = scores.length
@@ -3116,7 +3117,7 @@ class EngineSpec extends AnyFunSuite {
       .collectFirst { case (v, i) if scores.count(_ <= v) * 10 >= n * 9 => v }
       .get
     val wantSel = scores.count(_ > cut)
-    val rows = TrainingData.defs("x149_rholoss_select")(spark, sf).collect()
+    val rows = SparkEntry.queries("x149_rholoss_select")(spark, sf).collect()
     assert(rows.nonEmpty)
     assert(rows.map(_.getAs[Long]("n_docs")).sum == n.toLong)
     assert(rows.map(_.getAs[Long]("n_sel")).sum == wantSel.toLong)
@@ -3141,12 +3142,12 @@ class EngineSpec extends AnyFunSuite {
       (0 until 200).map(i =>
         (1000L + i, "flat", "p q q p p q q p q p q p")))
       .toDF("doc_id", "source", "text")
-    val ex = TrainingData.doremiExcessQ(docs).orderBy("source").collect()
+    val ex = TrainingDataMixture.doremiExcessQ(docs).orderBy("source").collect()
       .map(r => (r.getString(0), r.getLong(3))).toSeq
     val exm = ex.toMap
     assert(exm("grammar") > exm("flat") && exm("flat") >= 0L,
       s"bigram-structured domain must carry the larger excess: $exm")
-    val (steps, fin) = TrainingData.doremiWeights(ex)
+    val (steps, fin) = TrainingDataMixture.doremiWeights(ex)
     steps.foreach(st => assert(st.map(_._2).sum == 1000000L,
       s"step iterate must sum to 1e6 exactly: $st"))
     assert(fin.map(_._2).sum == 1000000L,
@@ -3162,7 +3163,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("x167 tokenizer audit: cross-tokenizer orderings on the fixture; closed unigram inventory flags unseen-char OOV") {
     import spark.implicits._
-    val rows = TrainingData.defs("x167_tokenizer_audit")(spark, sf).collect()
+    val rows = SparkEntry.queries("x167_tokenizer_audit")(spark, sf).collect()
     assert(rows.length == 3)
     val m = rows.map(r => r.getString(0) -> r).toMap
     assert(Set("bpe", "unigram", "wordpiece") == m.keySet)
@@ -3193,7 +3194,7 @@ class EngineSpec extends AnyFunSuite {
         (i, "src", "alpha beta gamma delta epsilon")) :+
       ((hoId, "src", "weirdo" + "ø")))
       .toDF("doc_id", "source", "text")
-    val out = TrainingData.tokenizerAuditOn(spark, docs).collect()
+    val out = TrainingDataLm.tokenizerAuditOn(spark, docs).collect()
       .map(r => r.getString(0) -> r).toMap
     assert(out("unigram").getAs[Long]("n_oov") > 0L,
       s"unseen char must be unigram-OOV: ${out.values.toSeq}")
@@ -3202,7 +3203,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x168 curriculum: budget lands exactly, stage composition honors the cartography regions, never-learned are dropped") {
-    val rows = TrainingData.defs("x168_curriculum_schedule")(spark, sf)
+    val rows = SparkEntry.queries("x168_curriculum_schedule")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     val kept = rows.filter(_.getAs[Long]("stage") >= 1L)
@@ -3221,7 +3222,7 @@ class EngineSpec extends AnyFunSuite {
         s"stage/region mismatch: $r")
     }
     // the dropped mass reconciles with x158's never-learned count
-    val neverLearned = TrainingData.defs("x158_forgetting_events")(spark, sf)
+    val neverLearned = SparkEntry.queries("x158_forgetting_events")(spark, sf)
       .collect().map(_.getAs[Long]("n_never_learned")).sum
     val dropped = rows.filter(_.getAs[Long]("stage") == 0L)
       .map(_.getAs[Long]("n_docs")).sum
@@ -3245,7 +3246,7 @@ class EngineSpec extends AnyFunSuite {
       (1L, "flat", toks("f", 1, 12)),
       (2L, "flat", toks("f", 2, 12)))
       .toDF("doc_id", "source", "text")
-    val out = TrainingData.scalingFitOn(spark, docs).collect()
+    val out = TrainingDataMixture.scalingFitOn(spark, docs).collect()
       .map(r => r.getString(0) -> r).toMap
     val dRow = out("decay")
     assert(dRow.getAs[Long]("n_points") == 3L)
@@ -3262,7 +3263,7 @@ class EngineSpec extends AnyFunSuite {
       s"non-negative slope must report no decay scale: $fRow")
     // carrier on the fixture: every emitted R* is positive and the
     // half-life sits below it (ln 2 < 1)
-    val rows = TrainingData.defs("x170_scaling_fit")(spark, sf).collect()
+    val rows = SparkEntry.queries("x170_scaling_fit")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.filter(!_.isNullAt(3)).foreach { r =>
       assert(r.getAs[Double]("r_star") > 0.0)
@@ -3278,7 +3279,7 @@ class EngineSpec extends AnyFunSuite {
     val train = (0 until 400).map(i =>
       (i.toLong, s"begin alpha beta gamma delta end"))
     val docs = train.toDF("doc_id", "text")
-    val out = TrainingData.minkMembershipOn(docs).collect()
+    val out = TrainingDataLm.minkMembershipOn(docs).collect()
       .map(r => r.getString(0) -> r).toMap
     // every pool doc here is either a re-keyed member (planted) or a
     // held-out copy of the same template (clean) — identical text, so
@@ -3290,13 +3291,13 @@ class EngineSpec extends AnyFunSuite {
     val docs2 = (train ++ (10000 until 10400).map(i =>
         (i.toLong, s"zz${i} qq${i} rr${i} ss${i} tt${i} uu${i}")))
       .toDF("doc_id", "text")
-    val out2 = TrainingData.minkMembershipOn(docs2).collect()
+    val out2 = TrainingDataLm.minkMembershipOn(docs2).collect()
       .map(r => r.getString(0) -> r).toMap
     assert(out2("planted").getAs[Double]("mean_mink_nll") <
       out2("clean").getAs[Double]("mean_mink_nll"),
       s"members must score likelier than novel text: $out2")
     // fixture carrier: same ordering on the real corpus
-    val rows = TrainingData.defs("x171_mink_membership")(spark, sf)
+    val rows = SparkEntry.queries("x171_mink_membership")(spark, sf)
       .collect().map(r => r.getString(0) -> r).toMap
     assert(rows("planted").getAs[Double]("mean_mink_nll") <
       rows("clean").getAs[Double]("mean_mink_nll"),
@@ -3316,7 +3317,7 @@ class EngineSpec extends AnyFunSuite {
       (2000 until 2300).map(i =>
         (i.toLong, "junk", s"alpha beta jk${i}a jk${i}b jk${i}c jk${i}d")))
       .toDF("doc_id", "source", "text")
-    val out = TrainingData.looSourceValueOn(docs).collect()
+    val out = TrainingDataMixture.looSourceValueOn(docs).collect()
       .map(r => r.getString(0) -> r).toMap
     assert(out("crit").getAs[Double]("delta") > 0.0,
       s"sole holder must price positive: ${out.values.toSeq}")
@@ -3331,14 +3332,14 @@ class EngineSpec extends AnyFunSuite {
 
   test("x173 GNS: identical examples carry zero gradient variance; fixture GNS positive") {
     import spark.implicits._
-    val wdf = spark.read.parquet(TrainingData.ensureClfWeights(spark, sf))
+    val wdf = spark.read.parquet(TrainingDataClassifier.ensureClfWeights(spark, sf))
     // 200 copies of one doc: every per-example gradient is identical,
     // so tr(Sigma) = 0 exactly (n*S2 = S1^2 per dim) and B = 0
     val docs = (0 until 200).map(i =>
       (i.toLong, "the quick brown fox and the lazy dog"))
       .toDF("doc_id", "text")
-    val tf = TrainingData.clfFeatures(docs)
-    val out = TrainingData.gradientNoiseOn(spark, tf, wdf)
+    val tf = TrainingDataClassifier.clfFeatures(docs)
+    val out = TrainingDataClassifier.gradientNoiseOn(spark, tf, wdf)
       .collect()(0)
     assert(out.getAs[Double]("grad_trace") == 0.0,
       s"identical examples must have zero variance: $out")
@@ -3346,7 +3347,7 @@ class EngineSpec extends AnyFunSuite {
       || out.getAs[Double]("gns") == 0.0, s"B_simple must vanish: $out")
     // the real corpus is heterogeneous: positive noise scale, and the
     // trace obeys Cauchy-Schwarz
-    val fix = TrainingData.defs("x173_gradient_noise")(spark, sf)
+    val fix = SparkEntry.queries("x173_gradient_noise")(spark, sf)
       .collect()(0)
     assert(fix.getAs[Double]("grad_trace") >= 0.0)
     assert(fix.getAs[Double]("gns") > 0.0, s"fixture GNS: $fix")
@@ -3361,7 +3362,7 @@ class EngineSpec extends AnyFunSuite {
       val sprd = if (i < 50) " spread" else ""
       (i.toLong, s"tmpl filler$burst$sprd")
     }.toDF("doc_id", "text")
-    val rows = TrainingData.tokenBurstinessOn(docs).collect()
+    val rows = TrainingDataQuality.tokenBurstinessOn(docs).collect()
       .map(r => r.getString(0) -> r).toMap
     val fB = rows("burst").getAs[Double]("fano")
     val fS = rows("spread").getAs[Double]("fano")
@@ -3384,12 +3385,12 @@ class EngineSpec extends AnyFunSuite {
       (500 until 1000).map(i =>
         (i.toLong, "zulu yankee xray whiskey victor uniform tango sierra")))
       .toDF("doc_id", "text")
-    val out = TrainingData.driftC2stOn(spark, docs).collect()(0)
+    val out = TrainingDataClassifier.driftC2stOn(spark, docs).collect()(0)
     assert(out.getAs[Boolean]("drift"),
       s"vocabulary shift must alarm: $out")
     assert(out.getAs[Double]("test_acc") > 0.9, s"separable shift: $out")
     // stationary corpus: accuracy hugs chance, no alarm
-    val fix = TrainingData.defs("x175_drift_c2st")(spark, sf).collect()(0)
+    val fix = SparkEntry.queries("x175_drift_c2st")(spark, sf).collect()(0)
     assert(!fix.getAs[Boolean]("drift"),
       s"stationary corpus must stay calm: $fix")
     assert(math.abs(fix.getAs[Double]("test_acc") - 0.5) < 0.1)
@@ -3403,7 +3404,7 @@ class EngineSpec extends AnyFunSuite {
     val same = (0L until 4L).flatMap(c =>
       Seq.fill(25)((c, 0L)) ++ Seq.fill(25)((c, 1L)))
       .toDF("cell", "grp")
-    val j0 = TrainingData.embedDriftOn(same, spine).collect()(0)
+    val j0 = TrainingDataAnn.embedDriftOn(same, spine).collect()(0)
       .getAs[Double]("jsd_bits")
     assert(j0 == 0.0, s"identical populations must score zero: $j0")
     // disjoint: group 0 in cells {0,1}, group 1 in cells {2,3} —
@@ -3411,11 +3412,11 @@ class EngineSpec extends AnyFunSuite {
     val disj = ((0L until 2L).flatMap(c => Seq.fill(500)((c, 0L))) ++
       (2L until 4L).flatMap(c => Seq.fill(500)((c, 1L))))
       .toDF("cell", "grp")
-    val j1 = TrainingData.embedDriftOn(disj, spine).collect()(0)
+    val j1 = TrainingDataAnn.embedDriftOn(disj, spine).collect()(0)
       .getAs[Double]("jsd_bits")
     assert(j1 > 0.9 && j1 <= 1.0, s"disjoint populations near 1 bit: $j1")
     // the fixture's halves share the embedding distribution
-    val fix = TrainingData.defs("x176_embed_drift")(spark, sf)
+    val fix = SparkEntry.queries("x176_embed_drift")(spark, sf)
       .collect()(0).getAs[Double]("jsd_bits")
     assert(fix >= 0.0 && fix < 0.1, s"stationary fixture: $fix")
   }
@@ -3428,7 +3429,7 @@ class EngineSpec extends AnyFunSuite {
     val text = (0 until 100).map(i => s"t$i").mkString(" ")
     val docs = (0 until 100).map(i => (i.toLong, text))
       .toDF("doc_id", "text")
-    val out = TrainingData.packingPoliciesOn(spark, docs, 256L)
+    val out = TrainingDataMixture.packingPoliciesOn(spark, docs, 256L)
       .collect().map(r => r.getString(0) -> r).toMap
     assert(out("nfd").getAs[Long]("n_seqs") == 50L
       && out("nfd").getAs[Long]("n_pad") == 2800L, s"nfd: ${out("nfd")}")
@@ -3437,7 +3438,7 @@ class EngineSpec extends AnyFunSuite {
     assert(out("concat_chunk").getAs[Long]("n_seqs") == 40L
       && out("concat_chunk").getAs[Long]("n_pad") == 240L)
     // fixture: the policies order by construction
-    val fix = TrainingData.defs("x177_packing_policies")(spark, sf)
+    val fix = SparkEntry.queries("x177_packing_policies")(spark, sf)
       .collect().map(r => r.getString(0) -> r.getAs[Double]("waste")).toMap
     assert(fix("concat_chunk") <= fix("nfd") + 1e-9)
     assert(fix("nfd") <= fix("single_doc") + 1e-9)
@@ -3453,7 +3454,7 @@ class EngineSpec extends AnyFunSuite {
       (5L, "t4 t5 t6 t7 t8"),
       (10L, "t1 t2 t3 t4 t5 t6 t7 t8"),
       (100L, "zz yy xx ww vv uu")).toDF("doc_id", "text")
-    val out = TrainingData.pagerankCanonicalOn(spark, docs).collect()
+    val out = TrainingDataDedup.pagerankCanonicalOn(spark, docs).collect()
     assert(out.length == 1, s"one multi-member family: ${out.toSeq}")
     val r = out(0)
     assert(r.getAs[Long]("cluster") == 3L && r.getAs[Long]("size") == 3L)
@@ -3461,7 +3462,7 @@ class EngineSpec extends AnyFunSuite {
     assert(!r.getAs[Boolean]("agree"))
     // fixture families are symmetric triads — every rank ties back to
     // min-id, and sizes are all >= 2 by the output contract
-    val fix = TrainingData.defs("x178_pagerank_canonical")(spark, sf)
+    val fix = SparkEntry.queries("x178_pagerank_canonical")(spark, sf)
       .collect()
     assert(fix.nonEmpty)
     fix.foreach(row => assert(row.getAs[Long]("size") >= 2L))
@@ -3477,7 +3478,7 @@ class EngineSpec extends AnyFunSuite {
       (0L, "A", toks("a", 102)),
       (1L, "B", toks("a", 92)),
       (2L, "C", toks("c", 32))).toDF("doc_id", "source", "text")
-    val out = TrainingData.coverageSelectOn(spark, docs, 5).collect()
+    val out = TrainingDataMixture.coverageSelectOn(spark, docs, 5).collect()
     assert(out.length == 2, s"only positive-gain picks: ${out.toSeq}")
     assert(out(0).getAs[String]("source") == "A"
       && out(0).getAs[Long]("gain") == 100L)
@@ -3487,7 +3488,7 @@ class EngineSpec extends AnyFunSuite {
       s"A ∪ C covers everything: ${out(1)}")
     // fixture: marginal gains are non-increasing (submodularity) and
     // coverage is non-decreasing
-    val fix = TrainingData.defs("x179_coverage_select")(spark, sf)
+    val fix = SparkEntry.queries("x179_coverage_select")(spark, sf)
       .collect()
     assert(fix.nonEmpty)
     fix.map(_.getAs[Long]("gain")).sliding(2).foreach {
@@ -3512,7 +3513,7 @@ class EngineSpec extends AnyFunSuite {
           .orderBy(col("cu").desc, col("match_id"))))
       .filter(col("rk") === 1).collect()
       .forall(_.getAs[Long]("match_id") == 101L))
-    val top = TrainingData.marginTopPairs(cand).collect()
+    val top = TrainingDataAnn.marginTopPairs(cand).collect()
       .map(r => r.getAs[Long]("qid") -> r).toMap
     // margin flips every query to its true (non-hub) match
     assert(top(0L).getAs[Long]("match_id") == 11L)
@@ -3521,7 +3522,7 @@ class EngineSpec extends AnyFunSuite {
     top.values.foreach(r => assert(r.getAs[Boolean]("accepted")))
     // carrier: one row per even-id query with candidates; margins
     // positive; accepted ⇔ margin ≥ 1.05
-    val rows = TrainingData.defs("x148_margin_mining")(spark, sf).collect()
+    val rows = SparkEntry.queries("x148_margin_mining")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getAs[Long]("qid") % 2 == 0)
@@ -3558,7 +3559,7 @@ class EngineSpec extends AnyFunSuite {
     // scale — an order of magnitude under the inter-cluster floor
     assert(picks(2).radius < picks(0).radius / 5)
     // carrier: 6 picks over the 16 IVF cells, distinct, radius final ≤ first
-    val rows = TrainingData.defs("x146_kcenter_coreset")(spark, sf).collect()
+    val rows = SparkEntry.queries("x146_kcenter_coreset")(spark, sf).collect()
     assert(rows.length == 6)
     assert(rows.map(_.getAs[Long]("cid")).distinct.length == 6)
     val rads = rows.sortBy(_.getAs[Long]("step")).map(_.getAs[Double]("radius"))
@@ -3574,7 +3575,7 @@ class EngineSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
       .groupBy(identity).view.mapValues(_.size.toLong).toMap
     val total = cls.values.sum
-    val rows = TrainingData.defs("x147_k_anonymity")(spark, sf).collect()
+    val rows = SparkEntry.queries("x147_k_anonymity")(spark, sf).collect()
     assert(rows.length == 4)
     rows.foreach { r =>
       val k = r.getAs[Long]("k")
@@ -3604,7 +3605,7 @@ class EngineSpec extends AnyFunSuite {
     assert(Bpe.trainWordPieceOnVocab(vocab, 50).size == 2)
     // carrier: score column IS the floor-quotient of the count columns,
     // steps are consecutive from 1, merged = lhs+rhs
-    val rows = TrainingData.defs("x145_wordpiece_train")(spark, sf)
+    val rows = SparkEntry.queries("x145_wordpiece_train")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.zipWithIndex.foreach { case (r, i) =>
@@ -3619,7 +3620,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("x144 filter attribution: counts reconcile with independently composed rule sets") {
     import graft.text.TextFunctions._
-    val rows = TrainingData.defs("x144_filter_attribution")(spark, sf)
+    val rows = SparkEntry.queries("x144_filter_attribution")(spark, sf)
       .collect()
     assert(rows.length == 6)
     val byRule = rows.map(r => r.getAs[String]("rule") -> r).toMap
@@ -3673,16 +3674,16 @@ class EngineSpec extends AnyFunSuite {
       Array.tabulate(m, m)((i, j) =>
         nrm(i).zip(nrm(j)).map { case (a, b) => a * b }.sum / m)
     }
-    val (hOrth, _) = TrainingData.vendiEntropy(gram(vecs(false)))
+    val (hOrth, _) = TrainingDataMixture.vendiEntropy(gram(vecs(false)))
     val vOrth = math.exp(hOrth / 1e6)
     assert(vOrth > m - 0.5 && vOrth <= m + 1e-6,
       s"near-orthogonal Vendi $vOrth should approach $m")
-    val (hDup, _) = TrainingData.vendiEntropy(gram(vecs(true)))
+    val (hDup, _) = TrainingDataMixture.vendiEntropy(gram(vecs(true)))
     val vDup = math.exp(hDup / 1e6)
     assert(vDup < m - 0.5 && vDup > m - 1.6,
       s"one collapsed pair should cost ≈ one effective population: $vDup")
     // carrier: 10 labels, score within [1, m]
-    val r = TrainingData.defs("x143_vendi_diversity")(spark, sf).collect()
+    val r = SparkEntry.queries("x143_vendi_diversity")(spark, sf).collect()
     assert(r.length == 1)
     assert(r(0).getAs[Long]("n_labels") == 10L)
     val v = r(0).getAs[Double]("vendi")
@@ -3690,7 +3691,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x128 pairing consistency flags exactly the planted divergent copies") {
-    val rows = TrainingData.defs("x128_pairing_consistency")(spark, sf)
+    val rows = SparkEntry.queries("x128_pairing_consistency")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getBoolean(3)))
     assert(rows.nonEmpty)
@@ -3722,7 +3723,7 @@ class EngineSpec extends AnyFunSuite {
         .sortBy(n => (l2q(emb(q), emb(n)), n)).take(4).toSet
     }.toMap
     def topSets(name: String, maxRk: Int) =
-      TrainingData.defs(name)(spark, sf).collect()
+      SparkEntry.queries(name)(spark, sf).collect()
         .filter(_.getInt(3) <= maxRk)
         .map(r => (r.getLong(0), r.getLong(1)))
         .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
@@ -3740,7 +3741,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x130 quality MAD: histogram medians ≡ driver nearest-rank recompute") {
-    val rows = TrainingData.defs("x130_quality_mad")(spark, sf)
+    val rows = SparkEntry.queries("x130_quality_mad")(spark, sf)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
         r.getDouble(3), r.getLong(4)))
     assert(rows.nonEmpty)
@@ -3764,7 +3765,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x131 anneal selection: strict cut keeps ≤10% corpus-wide, per-source counts ≡ driver recompute") {
-    val rows = TrainingData.defs("x131_anneal_select")(spark, sf)
+    val rows = SparkEntry.queries("x131_anneal_select")(spark, sf)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(4), r.getLong(5)))
     assert(rows.nonEmpty)
@@ -3774,9 +3775,9 @@ class EngineSpec extends AnyFunSuite {
       s"strict > cut must keep at most 10%: $totalSel of $totalDocs")
     assert(totalSel > 0, "the anneal slice must be non-empty")
     // driver recompute off the shared scoring path
-    val wdf = spark.read.parquet(TrainingData.ensureClfWeights(spark, sf))
+    val wdf = spark.read.parquet(TrainingDataClassifier.ensureClfWeights(spark, sf))
     val docs = Tables.documents(spark, sf)
-    val scored = TrainingData.clfScores(TrainingData.clfFeatures(docs), wdf)
+    val scored = TrainingDataClassifier.clfScores(TrainingDataClassifier.clfFeatures(docs), wdf)
       .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
       .select(col("source"), col("pq"))
       .collect().map(r => (r.getString(0), r.getLong(1)))
@@ -3791,7 +3792,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x132 pagination stitch recovers every planted page split") {
-    val edges = TrainingData.defs("x132_pagination_stitch")(spark, sf)
+    val edges = SparkEntry.queries("x132_pagination_stitch")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(edges.nonEmpty)
     val planted = Tables.documents(spark, sf)
@@ -3807,14 +3808,14 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x133 DSIR resampling: per-source keeps ≡ driver replica, max-weight doc always kept") {
-    val rows = TrainingData.defs("x133_dsir_resample")(spark, sf)
+    val rows = SparkEntry.queries("x133_dsir_resample")(spark, sf)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     assert(rows.nonEmpty)
     // replica off x42's published weights
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), col("source"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val wq = TrainingData.defs("x42_dsir_weights")(spark, sf)
+    val wq = SparkEntry.queries("x42_dsir_weights")(spark, sf)
       .collect().map(r => r.getLong(0) ->
         math.round(r.getDouble(2) * 1e4)).toMap
     val mxw = wq.values.max
@@ -3850,7 +3851,7 @@ class EngineSpec extends AnyFunSuite {
       .select(col("source"), explode(col("fps")).as("fp")).distinct()
       .collect().map(r => r.getString(0) -> r.getLong(1))
     val sets = fs.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val rows = TrainingData.defs("x134_source_run_overlap")(spark, sf)
+    val rows = SparkEntry.queries("x134_source_run_overlap")(spark, sf)
       .collect().map(r => ((r.getString(0), r.getString(1)),
         (r.getLong(2), r.getDouble(3))))
     assert(rows.nonEmpty)
@@ -3869,23 +3870,37 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("a wrong-width weight relation fails in-plan instead of scoring NULLs") {
-    val wdf = spark.read.parquet(TrainingData.ensureClfWeights(spark, sf))
-    val traj = spark.read.parquet(TrainingData.ensureClfTrajectory(spark, sf))
-    val (tf, _) = TrainingData.qualityClfTf(spark, sf)
+    val wdf = spark.read.parquet(TrainingDataClassifier.ensureClfWeights(spark, sf))
+    val traj = spark.read.parquet(TrainingDataClassifier.ensureClfTrajectory(spark, sf))
+    val (tf, _) = TrainingDataClassifier.qualityClfTf(spark, sf)
     def raised(run: => Any): Boolean = {
       val e = intercept[Exception](run)
       Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .exists(t => Option(t.getMessage).exists(_.contains("68 buckets")))
     }
-    assert(raised(TrainingData.clfScores(tf,
+    assert(raised(TrainingDataClassifier.clfScores(tf,
       wdf.filter(col("bucket") < 67L)).collect()), "67 buckets")
-    assert(raised(TrainingData.clfScores(tf, wdf.withColumn("bucket",
+    assert(raised(TrainingDataClassifier.clfScores(tf, wdf.withColumn("bucket",
       when(col("bucket") === 0L, 68L).otherwise(col("bucket")))).collect()),
       "68 buckets with a gap at 0")
-    assert(raised(TrainingData.trajRow(traj.filter(
+    assert(raised(TrainingDataClassifier.trajRow(traj.filter(
       !(col("step") === 3L && col("bucket") === 5L))).collect()),
       "one trajectory step short a bucket")
-    assert(TrainingData.clfScores(tf, wdf).filter(col("pq").isNull).count() == 0)
+    assert(TrainingDataClassifier.clfScores(tf, wdf).filter(col("pq").isNull).count() == 0)
+  }
+
+  test("x111 fails in-plan on an embedding that is not 64 wide") {
+    import spark.implicits._
+    val docs = Seq((1L, "web", "alpha beta gamma"), (2L, "web", "beta delta"))
+      .toDF("doc_id", "source", "text")
+    def emb(width2: Int) = Seq((1L, Seq.fill(64)(0.5f)), (2L, Seq.fill(width2)(0.25f)))
+      .toDF("vec_id", "embedding")
+    val e = intercept[Exception](
+      TrainingDataQuality.alignmentScoreOn(docs, emb(63)).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains("must be 64 wide"))))
+    assert(TrainingDataQuality.alignmentScoreOn(docs, emb(64))
+      .filter(col("pass_rate").isNull).count() == 0)
   }
 
   test("Store: builds once, rebuilds only a bumped version, publishes atomically") {

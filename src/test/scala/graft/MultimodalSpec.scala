@@ -124,7 +124,7 @@ class MultimodalSpec extends AnyFunSuite {
     val sigs = Multimodal.dHash64(spark, Multimodal.withBinaryPayload(
       Tables.documents(spark, sf).select(col("doc_id"), col("text"))))
       .toDF().select(col("doc_id"), col("dhash").as("simhash"))
-    val banded = graft.queries.TrainingData.simhashBandedPairs(
+    val banded = graft.queries.TrainingDataDedup.simhashBandedPairs(
       sigs, bandBits = 16, nBands = 4, maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val brute = sigs.as("a").crossJoin(sigs.as("b"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Tables
 import graft.dedup.NearDup
-import graft.queries.TrainingData
+import graft.queries.TrainingDataQuality
 import graft.streaming.DocStream
 import graft.text.TextFunctions
 
@@ -50,7 +50,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(dupFps == 0, "exact duplicates survived dedup")
 
     // stage 3: packing — kept tokens land in training sequences exactly
-    val packed = TrainingData.packSequences(
+    val packed = TrainingDataQuality.packSequences(
       clean.select(col("doc_id"), col("source"), col("n_tok")), b = 128)
     val keptTokens = clean.agg(sum(col("n_tok"))).collect()(0).getLong(0)
     val packedTokens = packed.agg(sum(col("n_tokens"))).collect()(0).getLong(0)

@@ -56,7 +56,7 @@ class PlansSpec extends AnyFunSuite {
   }
 
   test("IVF cell assignment plans row-locally: no shuffle, no window sort") {
-    val plan = graft.queries.TrainingData
+    val plan = graft.queries.TrainingDataAnn
       .ivfCells(spark, sf, lloydIters = 0)
       .queryExecution.executedPlan.toString
     // r12: the argmax runs inside the row against the literal
@@ -85,7 +85,7 @@ class PlansSpec extends AnyFunSuite {
   }
 
   test("PII redaction plans with zero exchanges (scan-speed claim)") {
-    val plan = graft.queries.TrainingData.x26PiiRedaction(spark, sf)
+    val plan = graft.queries.TrainingDataQuality.x26PiiRedaction(spark, sf)
       .queryExecution.executedPlan.toString
     // the trailing orderBy is the oracle's presentation sort; nothing
     // BEFORE it may shuffle — so exactly the one range exchange
@@ -94,7 +94,7 @@ class PlansSpec extends AnyFunSuite {
   }
 
   test("sequence packing windows per source, never a single partition") {
-    val plan = graft.queries.TrainingData.x25PackSequences(spark, sf)
+    val plan = graft.queries.TrainingDataQuality.x25PackSequences(spark, sf)
       .queryExecution.executedPlan.toString
     assert(plan.contains("hashpartitioning(source"),
       s"expected the window exchange keyed by source:\n$plan")
@@ -106,12 +106,12 @@ class PlansSpec extends AnyFunSuite {
     // x157/x159: the 20x68 weight trajectory must never cost a
     // shuffle of the corpus-sized feature table. r11 rode a 1-row
     // BroadcastNestedLoopJoin; since the r12 task-side fold
-    // ([[TrainingData.trajPqRows]]) the trajectory travels in the
+    // ([[TrainingDataClassifier.trajPqRows]]) the trajectory travels in the
     // task closure and the per-step scoring is compiled row-local
     // code — NO join of any strategy and no doc-keyed exchange may
     // appear between the feature scan and the final rollup.
     for (q <- Seq("x157_cartography", "x159_tracin_self")) {
-      val plan = graft.queries.TrainingData.defs(q)(spark, sf)
+      val plan = SparkEntry.queries(q)(spark, sf)
         .queryExecution.executedPlan.toString
       assert(!plan.contains("Join"),
         s"$q must not join the trajectory at all (task-side fold):\n$plan")
@@ -122,14 +122,14 @@ class PlansSpec extends AnyFunSuite {
     // x160: the k-smallest scan partitions by source — a global
     // single-partition sort over the vocabulary would serialize at
     // scale
-    val p = graft.queries.TrainingData.defs("x160_kmv_distinct")(spark, sf)
+    val p = SparkEntry.queries("x160_kmv_distinct")(spark, sf)
       .queryExecution.executedPlan.toString
     assert(p.contains("hashpartitioning(source"),
       s"expected the rank window keyed by source:\n$p")
   }
 
   test("bloom dedup probes map-side: might_contain filters before the join") {
-    val plan = graft.queries.TrainingData.x29BloomDedup(spark, sf)
+    val plan = graft.queries.TrainingDataDedup.x29BloomDedup(spark, sf)
       .queryExecution.executedPlan.toString
     // both union branches carry a probe: NOT might_contain (definitely
     // new, skips the join) and might_contain (candidates)
@@ -149,7 +149,7 @@ class PlansSpec extends AnyFunSuite {
         "x85_dhash_neardup", "x83_kn_logppl", "x87_boilerplate_strip",
         "x91_lsh_precision", "x92_dhash_store", "x148_margin_mining",
         "x152_quality_survivor", "x149_rholoss_select")) {
-      val plan = graft.queries.TrainingData.defs(q)(spark, sf)
+      val plan = SparkEntry.queries(q)(spark, sf)
         .queryExecution.executedPlan.toString
       assert(!plan.contains("CartesianProduct"),
         s"$q must join on its bucket key:\n$plan")
@@ -159,7 +159,7 @@ class PlansSpec extends AnyFunSuite {
   test("filtered ANN pushes the label predicate down to the catalog scan") {
     // PRE-filtering is the point of x34: the metadata predicate must
     // reach the parquet reader, not run after the scan
-    val plan = graft.queries.TrainingData.x34FilteredAnn(spark, sf)
+    val plan = graft.queries.TrainingDataAnn.x34FilteredAnn(spark, sf)
       .queryExecution.executedPlan.toString
     assert(plan.contains("EqualTo(label,0)"),
       s"label predicate should appear in PushedFilters:\n$plan")
@@ -169,7 +169,7 @@ class PlansSpec extends AnyFunSuite {
     // The single-scan calibration's whole point: quality is an ingest
     // column, so neither the histogram pass nor the filter pass may
     // read `text` (or re-derive the score) from the staged corpus.
-    val plan = graft.queries.TrainingData.defs("x32b_quality_ingest")(spark, sf)
+    val plan = SparkEntry.queries("x32b_quality_ingest")(spark, sf)
       .queryExecution.executedPlan.toString
     val scans = plan.linesIterator.filter(_.contains("ReadSchema")).toSeq
     assert(scans.nonEmpty, s"no parquet scans in plan:\n$plan")
@@ -184,7 +184,7 @@ class PlansSpec extends AnyFunSuite {
     // the finalized adaptive plan
     for (name <- Seq("x30_tfidf_topk", "x39_unigram_logppl", "x42_dsir_weights",
         "x63_pmi_cooccurrence")) {
-      val q = graft.queries.TrainingData.defs(name)(spark, sf)
+      val q = SparkEntry.queries(name)(spark, sf)
       q.count()
       val plan = q.queryExecution.executedPlan.toString
       assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastExchange"),
@@ -196,7 +196,7 @@ class PlansSpec extends AnyFunSuite {
     // x43 is the map stage that writes the quantized serving copy at
     // 100 TB — any shuffle beyond the diagnostic output sort would
     // mean the quantizer itself doesn't scale embarrassingly
-    val q = graft.queries.TrainingData.defs("x43_embed_quantize")(spark, sf)
+    val q = SparkEntry.queries("x43_embed_quantize")(spark, sf)
     q.count()
     val plan = q.queryExecution.executedPlan.toString
     val exchanges = plan.linesIterator.filter(_.contains("Exchange")).toSeq
@@ -209,7 +209,7 @@ class PlansSpec extends AnyFunSuite {
     // self-join of the exploded corpus; the d²-cell sums join only
     // pinned driver-local sides — so the expensive d²-explode pass
     // is the plan's ONLY corpus scan (the S_i sums are pre-collected)
-    val q = graft.queries.TrainingData.defs("x46_embed_covariance")(spark, sf)
+    val q = SparkEntry.queries("x46_embed_covariance")(spark, sf)
     q.count()
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"),
@@ -220,7 +220,7 @@ class PlansSpec extends AnyFunSuite {
 
   test("correlation shares covariance's shape: one scan, no shuffle joins") {
     // x48's diagonal moments are pinned driver-local like x46's sums
-    val q = graft.queries.TrainingData.defs("x48_embed_correlation")(spark, sf)
+    val q = SparkEntry.queries("x48_embed_correlation")(spark, sf)
     q.count()
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"),
@@ -232,7 +232,7 @@ class PlansSpec extends AnyFunSuite {
   test("pca projection is a row-local fold: no joins, sort-only exchange") {
     // the eigensolve happened on the driver; the distributed part is
     // scan → project(ordered fold vs literal eigenvector) → sort
-    val q = graft.queries.TrainingData.defs("x49_pca_project")(spark, sf)
+    val q = SparkEntry.queries("x49_pca_project")(spark, sf)
     q.count()
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), s"x49 should not join:\n$plan")
@@ -246,7 +246,7 @@ class PlansSpec extends AnyFunSuite {
     // x65's covariance + deflated eigensolve collapse to the driver;
     // the distributed part is scan → project(two ordered folds vs
     // literal eigenvectors) → sort — exactly x49's serving shape
-    val q = graft.queries.TrainingData.defs("x65_embed_whiten")(spark, sf)
+    val q = SparkEntry.queries("x65_embed_whiten")(spark, sf)
     q.count()
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), s"x65 should not join:\n$plan")
@@ -259,7 +259,7 @@ class PlansSpec extends AnyFunSuite {
   test("standardization attaches moments as literals: no join, sort-only exchange") {
     // x51's per-dim moments ride broadcast-literal arrays via
     // element_at — the scoring plan is scan → explode → project → sort
-    val q = graft.queries.TrainingData.defs("x51_embed_standardize")(spark, sf)
+    val q = SparkEntry.queries("x51_embed_standardize")(spark, sf)
     q.count()
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), s"x51 should not join:\n$plan")
@@ -274,7 +274,7 @@ class PlansSpec extends AnyFunSuite {
     // map-side-combinable pass, pins them driver-local, and the
     // pairwise compare never touches data: the final plan has no
     // parquet scan and no shuffle join at all
-    val q = graft.queries.TrainingData.defs("x47_source_overlap")(spark, sf)
+    val q = SparkEntry.queries("x47_source_overlap")(spark, sf)
     q.count()
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("Scan parquet"),
@@ -288,7 +288,7 @@ class PlansSpec extends AnyFunSuite {
     // partitioning satisfies the (doc_id, ch) group, the doc_id
     // window, and the final doc_id group, so the per-char rows never
     // cross the wire — one text-sized exchange plus the output sort
-    val q = graft.queries.TrainingData.defs("x53_char_entropy")(spark, sf)
+    val q = SparkEntry.queries("x53_char_entropy")(spark, sf)
     q.count()
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), s"x53 should not join:\n$plan")
@@ -299,7 +299,7 @@ class PlansSpec extends AnyFunSuite {
   }
 
   test("token fertility is one scan onto |sources| rows") {
-    val q = graft.queries.TrainingData.defs("x54_token_fertility")(spark, sf)
+    val q = SparkEntry.queries("x54_token_fertility")(spark, sf)
     q.count()
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), s"x54 should not join:\n$plan")
@@ -310,7 +310,7 @@ class PlansSpec extends AnyFunSuite {
   test("language divergence derives everything from the pinned count grid") {
     // the |sources|×|langs| counts are collected once; the JSD plan
     // itself reads only local relations — no parquet, no shuffle join
-    val q = graft.queries.TrainingData.defs("x55_lang_divergence")(spark, sf)
+    val q = SparkEntry.queries("x55_lang_divergence")(spark, sf)
     q.count()
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("Scan parquet"),
@@ -323,7 +323,7 @@ class PlansSpec extends AnyFunSuite {
     // x56 is scan → project(token array) → explode(chunk grid) →
     // slice/md5 → sort; the only exchanges are the parallelism spread
     // and the output sort
-    val q = graft.queries.TrainingData.defs("x56_chunk_documents")(spark, sf)
+    val q = SparkEntry.queries("x56_chunk_documents")(spark, sf)
     q.count()
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), s"x56 should not join:\n$plan")
@@ -335,7 +335,7 @@ class PlansSpec extends AnyFunSuite {
     // the limit-100 cut must ride TakeOrderedAndProject over the
     // bounded pair table — a full orderBy shuffle of the vocabulary
     // pair space would be the anti-shape at web-corpus vocabulary
-    val q = graft.queries.TrainingData.defs("x63_pmi_cooccurrence")(spark, sf)
+    val q = SparkEntry.queries("x63_pmi_cooccurrence")(spark, sf)
     q.count()
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrdered"),
@@ -346,7 +346,7 @@ class PlansSpec extends AnyFunSuite {
     // x60's plan must scan the signature store's bands/sigs parquet;
     // the old corpus contributes NO fresh signature computation (its
     // md5/minhash folds happened once, at store build time)
-    val q = graft.queries.TrainingData.defs("x60_signature_store")(spark, sf)
+    val q = SparkEntry.queries("x60_signature_store")(spark, sf)
     q.count()
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("sig_store"),
@@ -354,7 +354,7 @@ class PlansSpec extends AnyFunSuite {
   }
 
   test("quality sampling is row-local: no join, sort-only exchange") {
-    val q = graft.queries.TrainingData.defs("x61_quality_sampling")(spark, sf)
+    val q = SparkEntry.queries("x61_quality_sampling")(spark, sf)
     q.count()
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), s"x61 should not join:\n$plan")
@@ -368,7 +368,7 @@ class PlansSpec extends AnyFunSuite {
     // x57's diagonal moments are pinned driver-local (x51 pattern);
     // the scoring plan is one scan → explode → project → vec-keyed
     // map-side-combinable groupBy — no join of any kind
-    val q = graft.queries.TrainingData.defs("x57_embed_outliers")(spark, sf)
+    val q = SparkEntry.queries("x57_embed_outliers")(spark, sf)
     q.count()
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), s"x57 should not join:\n$plan")
@@ -380,7 +380,7 @@ class PlansSpec extends AnyFunSuite {
     // the centroid table is |labels|×d and its norm table |labels| —
     // both must attach as BroadcastHashJoin; a SortMergeJoin here
     // would mean a corpus-sized shuffle on the label key
-    val q = graft.queries.TrainingData.defs("x69_prototypicality")(spark, sf)
+    val q = SparkEntry.queries("x69_prototypicality")(spark, sf)
     q.count()
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("SortMergeJoin"),
@@ -390,7 +390,7 @@ class PlansSpec extends AnyFunSuite {
   }
 
   test("x70 mixture sampling: stats grid broadcasts, corpus never shuffle-joins") {
-    val q = graft.queries.TrainingData.defs("x70_mixture_sample")(spark, sf)
+    val q = SparkEntry.queries("x70_mixture_sample")(spark, sf)
     q.count()
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("SortMergeJoin"),
@@ -398,7 +398,7 @@ class PlansSpec extends AnyFunSuite {
   }
 
   test("x80 quality trend is one pruned scan, no join") {
-    val q = graft.queries.TrainingData.defs("x80_quality_trend")(spark, sf)
+    val q = SparkEntry.queries("x80_quality_trend")(spark, sf)
     q.count()
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), s"x80 should not join:\n$plan")
@@ -411,7 +411,7 @@ class PlansSpec extends AnyFunSuite {
     // scan of the base table; the persisted store contributes its
     // 16-row centroids and an id-only cell-map scan (column-pruned —
     // no `embedding` in any store ReadSchema)
-    val q = graft.queries.TrainingData.defs("x109_ivf_addbatch")(spark, sf)
+    val q = SparkEntry.queries("x109_ivf_addbatch")(spark, sf)
     q.count()
     def leaves(p: org.apache.spark.sql.execution.SparkPlan)
         : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
@@ -435,11 +435,11 @@ class PlansSpec extends AnyFunSuite {
     // round-10 verdict item 5: the drift audit must read codebooks the
     // batch never influenced — the plan's store scans all point at the
     // ivfpqbase store, and the store itself holds no batch id
-    val p = graft.queries.TrainingData.ensureIvfPqBase(spark, sf)
+    val p = graft.queries.TrainingDataAnn.ensureIvfPqBase(spark, sf)
     assert(spark.read.parquet(s"$p/codes")
       .filter(col("vec_id") % 10 === 7).count() == 0,
       "base store build must exclude the batch slice")
-    val q = graft.queries.TrainingData.defs("x110_ivfpq_addbatch")(spark, sf)
+    val q = SparkEntry.queries("x110_ivfpq_addbatch")(spark, sf)
     q.count()
     def leaves(pl: org.apache.spark.sql.execution.SparkPlan)
         : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = pl match {
@@ -463,7 +463,7 @@ class PlansSpec extends AnyFunSuite {
     // the x32b contract applied to the dedup family: the read path
     // must be a labels-parquet scan + family window + sort — if any
     // shingle verify or pair machinery appears, the staging is a lie
-    val q = graft.queries.TrainingData.defs("x98_staged_dedup")(spark, sf)
+    val q = SparkEntry.queries("x98_staged_dedup")(spark, sf)
     q.count()
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("array_intersect"),
@@ -478,7 +478,7 @@ class PlansSpec extends AnyFunSuite {
     // the x98 staged-read contract for model artifacts: the plan must
     // read the persisted clfw_ parquet — scoring a corpus may never
     // re-enter the 20-job training loop
-    val q = graft.queries.TrainingData.defs("x118_clf_calibration")(spark, sf)
+    val q = SparkEntry.queries("x118_clf_calibration")(spark, sf)
     q.count()
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("clfw_"),
@@ -486,7 +486,7 @@ class PlansSpec extends AnyFunSuite {
   }
 
   test("x136 reads the staged temperature + weight stores, no refit in-plan") {
-    val q = graft.queries.TrainingData.defs("x136_temp_scaling")(spark, sf)
+    val q = SparkEntry.queries("x136_temp_scaling")(spark, sf)
     q.count()
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("clfw_") && plan.contains("clft_"),
@@ -495,7 +495,7 @@ class PlansSpec extends AnyFunSuite {
 
   test("x134/x126 read the ingest-staged winnow store, not a fresh fingerprint scan") {
     for (name <- Seq("x134_source_run_overlap", "x126_winnowing")) {
-      val q = graft.queries.TrainingData.defs(name)(spark, sf)
+      val q = SparkEntry.queries(name)(spark, sf)
       q.count()
       val plan = q.queryExecution.executedPlan.toString
       assert(plan.contains("winnow2_"),
@@ -508,7 +508,7 @@ class PlansSpec extends AnyFunSuite {
     // contain no hash-partitioned exchange (the only exchange allowed
     // is the range partitioning of the final orderBy)
     for (q <- Seq("x93_intradoc_dedup", "x103_span_corruption")) {
-      val df = graft.queries.TrainingData.defs(q)(spark, sf)
+      val df = SparkEntry.queries(q)(spark, sf)
       df.count()
       val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange hashpartitioning"),
@@ -520,8 +520,7 @@ class PlansSpec extends AnyFunSuite {
     // the df count and the join back are fp-keyed; text is consumed
     // row-locally into md5 segments before any exchange, so no
     // exchange in the plan may carry the text column
-    val q = graft.queries.TrainingData
-      .defs("x66_boilerplate_segments")(spark, sf)
+    val q = SparkEntry.queries("x66_boilerplate_segments")(spark, sf)
     q.count()
     val plan = q.queryExecution.executedPlan.toString
     plan.linesIterator.filter(_.contains("Exchange hashpartitioning"))

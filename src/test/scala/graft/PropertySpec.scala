@@ -122,14 +122,14 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("property: 64-bit simhash banded blocking is lossless for hamming <= 3") {
-    import graft.queries.TrainingData
+    import graft.queries.TrainingDataDedup
     // production width: 64-bit signatures, 4 bands x 16 bits. Pigeonhole:
     // 3 differing bits cannot touch all 4 bands, so the banded plan must
     // return EXACTLY the n^2 scan's pairs.
     def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1), r.getInt(2))
-    val banded = TrainingData.simhash64Dedup(spark, TestSpark.sf)
+    val banded = TrainingDataDedup.simhash64Dedup(spark, TestSpark.sf)
       .collect().map(key).toSet
-    val brute = TrainingData
+    val brute = TrainingDataDedup
       .simhashBrutePairs(spark, TestSpark.sf, bits = 64, maxHamming = 3)
       .collect().map(key).toSet
     assert(banded == brute,
@@ -138,7 +138,7 @@ class PropertySpec extends AnyFunSuite {
     // signatures use the full width: some doc's sign bit (bit 63) is
     // set, i.e. the signature is negative as a signed long — a mask
     // regression to 63 bits would fail here
-    val negative = TrainingData.simhashSigs64(spark, TestSpark.sf)
+    val negative = TrainingDataDedup.simhashSigs64(spark, TestSpark.sf)
       .filter(org.apache.spark.sql.functions.col("simhash") < 0).count()
     assert(negative > 0, "no signature has bit 63 set")
   }
@@ -199,7 +199,7 @@ class PropertySpec extends AnyFunSuite {
     val totals = rows.groupBy(_._2).view.mapValues(_.map(_._3).sum).toMap
 
     // unsharded (subShards = 1): one sequence space per source
-    val packed = graft.queries.TrainingData.packSequences(df, b).collect()
+    val packed = graft.queries.TrainingDataQuality.packSequences(df, b).collect()
     for ((src, seqs) <- packed.groupBy(_.getString(0))) {
       // conservation: every token lands in exactly one sequence slot
       assert(seqs.map(_.getLong(4)).sum == totals(src), s"token loss in $src")
@@ -213,7 +213,7 @@ class PropertySpec extends AnyFunSuite {
 
     // sharded (subShards = 4): independent sequence spaces per
     // (source, sub_shard); sharded ≡ unsharded on token conservation
-    val sharded = graft.queries.TrainingData.packSequences(df, b, 4).collect()
+    val sharded = graft.queries.TrainingDataQuality.packSequences(df, b, 4).collect()
     val shardedTotals = sharded.groupBy(_.getString(0))
       .view.mapValues(_.map(_.getLong(4)).sum).toMap
     assert(shardedTotals == totals.filter(_._2 > 0),
@@ -238,8 +238,8 @@ class PropertySpec extends AnyFunSuite {
     val budget = 300L
     val base = rows.toDF("doc_id", "source", "n_tok")
       .withColumn("amostra_chave", md5(col("doc_id").cast("string")))
-    val one = graft.queries.TrainingData.domainMixture(base, budget, 1).collect()
-    val four = graft.queries.TrainingData.domainMixture(base, budget, 4).collect()
+    val one = graft.queries.TrainingDataMixture.domainMixture(base, budget, 1).collect()
+    val four = graft.queries.TrainingDataMixture.domainMixture(base, budget, 4).collect()
     val totals = rows.groupBy(_._2).view.mapValues(_.map(_._3).sum).toMap
     // subShards=1 degenerates to the plain greedy prefix: quota == budget
     assert(one.forall(_.getLong(5) == budget))

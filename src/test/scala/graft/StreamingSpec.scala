@@ -314,8 +314,8 @@ class StreamingSpec extends AnyFunSuite {
     val whole = spark.read.parquet(tmp)
       .select(explode(graft.text.TextFunctions.wsTokens(col("text")))
         .as("w"))
-      .select(graft.queries.TrainingData.hllJ(col("w")).as("j"),
-        graft.queries.TrainingData.hllRho(col("w")).as("rho"))
+      .select(graft.queries.TrainingDataMixture.hllJ(col("w")).as("j"),
+        graft.queries.TrainingDataMixture.hllRho(col("w")).as("rho"))
       .groupBy(col("j"))
       .agg(org.apache.spark.sql.functions.max(col("rho")).as("m"))
     assert(merged.exceptAll(whole).count() == 0 &&
@@ -374,7 +374,7 @@ class StreamingSpec extends AnyFunSuite {
     // contract — the batch slice doc_id % 10 = 7 is the "arriving"
     // data the monitor watches)
     val base = Tables.documents(spark, sf).filter(col("doc_id") % 10 =!= 7)
-    val vocab = graft.queries.TrainingData.bpeVocab(base, 16).map(_._1)
+    val vocab = graft.queries.TrainingDataLm.bpeVocab(base, 16).map(_._1)
     val arriving = Tables.documents(spark, sf)
       .filter(col("doc_id") % 10 === 7).select("doc_id", "text")
       .withColumn("ts", (col("doc_id") * 60).cast("timestamp"))
@@ -410,7 +410,7 @@ class StreamingSpec extends AnyFunSuite {
   test("model-gate admission: stream ≡ batch ≡ x122's kept counts") {
     val docs = graft.core.Tables.documents(spark, sf)
       .select("doc_id", "source", "text")
-    val weights = graft.queries.TrainingData.ensureClfWeights(spark, sf)
+    val weights = graft.queries.TrainingDataClassifier.ensureClfWeights(spark, sf)
     val tmp = java.nio.file.Files.createTempDirectory("docs_gate").toString
     docs.write.mode("overwrite").parquet(tmp)
     val outDir = java.nio.file.Files.createTempDirectory("gate_out").toString
@@ -430,8 +430,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(out.count() == batch.count())
     assert(out.select("doc_id").exceptAll(batch.select("doc_id")).count() == 0)
     // the stream admits exactly the population x122 reports as kept
-    val x122Kept = graft.queries.TrainingData
-      .defs("x122_clf_filter")(spark, sf)
+    val x122Kept = SparkEntry.queries("x122_clf_filter")(spark, sf)
       .agg(org.apache.spark.sql.functions.sum("n_kept")).collect()(0).getLong(0)
     assert(out.count() == x122Kept,
       s"stream admitted ${out.count()} vs x122 kept $x122Kept")
@@ -478,7 +477,7 @@ class StreamingSpec extends AnyFunSuite {
       .select("doc_id", "text").localCheckpoint()
     val store = java.nio.file.Files.createTempDirectory("e2e_sig").toString
     graft.dedup.NearDup.saveSignatureStore(corpus, store)
-    val weights = graft.queries.TrainingData.ensureClfWeights(spark, sf)
+    val weights = graft.queries.TrainingDataClassifier.ensureClfWeights(spark, sf)
     // arriving: exact re-deliveries (die at the fingerprint gate),
     // near-copies (die at the signature gate), and genuinely new docs
     val redelivered = corpusRaw.filter(col("doc_id") < 100)
@@ -538,8 +537,8 @@ class StreamingSpec extends AnyFunSuite {
     // the model stage reconciles with x122's scoring methodology on
     // exactly the population that reached it
     val nd = batchStages(3)._2
-    val kept = graft.queries.TrainingData.clfScores(
-        graft.queries.TrainingData.clfFeatures(nd.select("doc_id", "text")),
+    val kept = graft.queries.TrainingDataClassifier.clfScores(
+        graft.queries.TrainingDataClassifier.clfFeatures(nd.select("doc_id", "text")),
         spark.read.parquet(weights))
       .filter(col("pq") >= 500000L).count()
     assert(fsum("modelo") == kept,
