@@ -28,20 +28,13 @@ import graft.text.TextFunctions._
   */
 object NearDup {
 
-  /** 32-bit value from 8 hex chars of md5(c) starting at `start`
-    * (1-based) — the ONE positional hex parse every md5-derived hash
-    * in the engine builds on (cross-engine oracle contract: the
-    * DuckDB mirrors parse the same positions the same way). */
-  private[graft] def md5Hash32At(c: Column, start: Int): Column = {
-    val hex = substring(md5(c), start, 8)
-    (0 until 8).map { i =>
-      (instr(lit("0123456789abcdef"), substring(hex, i + 1, 1)) - 1)
-        .cast("long") * lit(1L << (4 * (7 - i)))
-    }.reduce(_ + _)
-  }
-
-  /** 32-bit md5-prefix hash of a string column. */
-  private[graft] def md5Hash32(c: Column): Column = md5Hash32At(c, 1)
+  /** 32-bit md5-prefix hash of a string column: the first 8 hex
+    * digits of md5(c), parsed natively
+    * ([[graft.functions.TextHashExpressions.md5Hash32At]]) — the hash
+    * every md5-derived bucket in the engine builds on (cross-engine
+    * oracle contract: the DuckDB mirrors parse the same positions). */
+  private[graft] def md5Hash32(c: Column): Column =
+    graft.functions.TextHashExpressions.md5Hash32At(c, 1)
 
   /** Exact dedup: hash-groupBy on the normalized-text fingerprint,
     * keep the minimum id (`ETL`-style first-wins). Shuffles only

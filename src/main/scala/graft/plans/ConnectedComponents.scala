@@ -18,14 +18,15 @@ import org.apache.spark.sql.functions._
   * chained component A~B~C~… is exactly the case that shows up, and
   * PropertySpec pins the round bound on a path graph.
   *
-  * `localCheckpoint` EVERY round, taken before the convergence
-  * count: the eager checkpoint is the round's single full
-  * evaluation and the count then reads the cached blocks — the
-  * prior every-other-round scheme made the count evaluate the raw
-  * plan and the next odd round's checkpoint re-evaluate it (~1.5
-  * full evaluations per round vs exactly 1 now). The loop exits at
-  * the exact fixpoint, so labels equal the transitive closure (each
-  * node → min node id of its component).
+  * `localCheckpoint` EVERY round, and the convergence count rides
+  * it: the round's changed-label count is a `Dataset.observe` metric
+  * on the very plan the checkpoint materializes, read back from that
+  * execution — the round's single full evaluation is also its count,
+  * with no separate `count()` job over the cached blocks. Only
+  * (id, label) is checkpointed; the old label the count compares
+  * against is never stored. The loop exits at the exact fixpoint, so
+  * labels equal the transitive closure (each node → min node id of
+  * its component).
   *
   * Checkpoint blocks are freed AS THE LOOP RUNS: once round N's
   * checkpoint has materialized, round N-1's snapshot has no remaining
@@ -73,8 +74,8 @@ object ConnectedComponents {
         .join(labels.select(col("id").as("dst"), col("label").as("dl")),
           Seq("dst"))
         .groupBy(col("src").as("id")).agg(min(col("dl")).as("nb"))
-      // carry the old label through so the convergence check is a
-      // filter on the update pass, not a second join
+      // carry the old label through so the convergence check is an
+      // in-plan counter on the update pass, not a second join
       val hooked = labels.join(nbMin, Seq("id"), "left")
         .select(col("id"), col("label").as("old"),
           least(col("label"), coalesce(col("nb"), col("label"))).as("label"))
@@ -85,19 +86,20 @@ object ConnectedComponents {
           Seq("label"), "left")
         .select(col("id"), col("old"),
           least(col("label"), coalesce(col("ll"), col("label"))).as("label"))
-      // checkpoint FIRST (the round's one full evaluation), then run
-      // the convergence count over the cached blocks — counting the
-      // raw plan and checkpointing it afterwards would evaluate the
-      // round twice (eager localCheckpoint re-runs the plan)
+        .observe("cc_changed",
+          sum(when(col("label") =!= col("old"), 1L).otherwise(0L)).as("n"))
+        .select(col("id"), col("label"))
+      // the eager checkpoint is the round's one evaluation, and its
+      // execution carries the observed count (null on an empty graph)
       val next = nextRaw.localCheckpoint()
-      changed = next.filter(col("label") =!= col("old")).count()
-      // `next` is fully materialized (eager checkpoint) and the
-      // convergence count has run, so the previous round's snapshot
-      // has no remaining references — free it NOW, keeping live
-      // storage at adjacency + two label tables regardless of how
-      // many rounds the graph needs.
+      changed = Option(nextRaw.queryExecution.observedMetrics("cc_changed")
+        .getAs[java.lang.Long]("n")).fold(0L)(_.longValue)
+      // `next` is fully materialized and counted, so the previous
+      // round's snapshot has no remaining references — free it NOW,
+      // keeping live storage at adjacency + two label tables
+      // regardless of how many rounds the graph needs.
       freeCheckpoint(labels)
-      labels = next.select(col("id"), col("label"))
+      labels = next
       round += 1
     }
     // The last round's snapshot carries the result; the adjacency is

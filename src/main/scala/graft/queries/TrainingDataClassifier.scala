@@ -704,12 +704,15 @@ object TrainingDataClassifier {
     * stopword — buckets 64-66) and a bias (67), labelled by the
     * engine's [[qualityScore]] ≥ 0.5 gate. Returns (tf, nDocs);
     * docs with no tokens drop (inner semantics). Dense rows: nDocs
-    * is exactly the row count. Consumers whose downstream pins its
+    * is exactly the row count, observed by the checkpoint's own job
+    * (no separate count). Consumers whose downstream pins its
     * own materialization ride this too; the five single-plan SQL
     * scorers use [[clfTf1]]. */
   private[graft] def qualityClfTf(s: SparkSession, d: String): (DataFrame, Long) = {
-    val tf = clfFeatures(Tables.documents(s, d)).localCheckpoint()
-    (tf, tf.count())
+    val feats = clfFeatures(Tables.documents(s, d))
+      .observe("clf_tf_rows", count(lit(1)).as("n"))
+    val tf = feats.localCheckpoint()
+    (tf, feats.queryExecution.observedMetrics("clf_tf_rows").getLong(0))
   }
 
   /** Single-pass feature table: NO checkpoint, NO count (optimization
@@ -738,57 +741,37 @@ object TrainingDataClassifier {
     * the STREAMING admission gate
     * ([[graft.streaming.DocStream.admitQuality]]), so no consumer can
     * drift from the features the registry weights were trained on.
-    * Docs with zero tokens produce no rows (they carry no signal and
-    * no gate can score them).
+    * ONE feature row per INPUT row: every caller's `doc_id` is a key
+    * (`documents`, the dedup corpora, stream batches), so that is one
+    * row per doc. Rows whose text is null or has no non-empty token
+    * produce no feature row (they carry no signal and no gate can
+    * score them).
     *
-    * Representation (optimization r11): ONE DENSE row
-    * per doc — (doc_id, y, xs: array<double>[68]) with xs(b) = 0.0 for
-    * buckets the doc never fires — instead of the former sparse
-    * (doc_id, y, bucket, x) rows. Every downstream logit/gradient is
-    * an integer sum whose absent-bucket terms are round(w·0·1e9) = 0,
-    * so all scores, gradients and trained weights are BIT-IDENTICAL to
-    * the sparse path; what changes is the plan shape: scoring loses
-    * its per-consumer (bucket-join + doc_id re-shuffle) pair and the
-    * 20-step trainer loses 2 full shuffles of the feature table PER
-    * STEP (each step is now one row-local scan onto a 68-key
-    * map-side-combinable aggregate).
+    * Representation: ONE DENSE row per doc — (doc_id, y,
+    * xs: array<double>[68]) with xs(b) = 0.0 for buckets the doc
+    * never fires. Every downstream logit/gradient is an integer sum
+    * whose absent-bucket terms are round(w·0·1e9) = 0, so scores,
+    * gradients and trained weights equal a sparse (doc, bucket)
+    * table's, while scoring and each GD step stay row-local folds.
     *
-    * Build shape — two branches over the doc scan (bucket counts; the
-    * label/side-feature projection) joined on doc_id. A ONE-scan fused
-    * shape (y/f0..f2 computed below the explode and folded through
-    * both aggregations as first(...)) was prototyped and MEASURED
-    * SLOWER in r12 (isolated noop-timed at sf0.1: fused ≈ 1.9–2.3 s vs
-    * ≈ 1.2 s for this shape; carrying even literal constants through
-    * the two aggregations cost ≈ +0.8 s — the extra aggregate-buffer
-    * columns price every token row, while the second text scan prices
-    * only docs and runs as a parallel branch). Kept two-scan on the
-    * measurement (the "ideal" one-pass plan lost to the
-    * empirical loop). */
-  private[graft] def clfFeatures(docs0: DataFrame): DataFrame = {
-    val docs = docs0.select(col("doc_id"), col("text"))
-    val bowMap = docs
-      .select(col("doc_id"), explode(wsTokens(lower(col("text")))).as("w"))
-      .filter(col("w") =!= "")
-      .groupBy(col("doc_id"),
-        pmod(graft.dedup.NearDup.md5Hash32(col("w")), lit(64L)).as("bucket"))
-      .agg(count(lit(1)).as("cnt"))
-      .groupBy(col("doc_id"))
-      .agg(map_from_entries(collect_list(struct(col("bucket"), col("cnt"))))
-          .as("m"),
-        sum(col("cnt")).as("n_tok"))
+    * Build shape: ONE projection over one scan. The 64 bucket counts
+    * come from the native [[graft.functions.TextHashExpressions
+    * .hashedBow]] kernel (per row: md5-prefix bucket of every
+    * non-empty token, counted in place — no explode, no groupBy, no
+    * join; [[hashedBowRows]]), and xs(b) = cnt(b) / n_tok in
+    * double, n_tok the row's non-empty token count. */
+  private[graft] def clfFeatures(docs: DataFrame): DataFrame = {
     val lenScore = least(tokenCount(col("text")).cast("double") / 50.0, lit(1.0))
     val punctOk = lit(1.0) - least(punctRatio(col("text")) * 5.0, lit(1.0))
     val stopOk = least(stopwordRatio(col("text"), stopwords) * 10.0, lit(1.0))
-    val lab = docs.select(col("doc_id"),
-      (qualityScore(col("text"), stopwords) >= 0.5).cast("long").as("y"),
-      array(lenScore, punctOk, stopOk, lit(1.0)).as("fs"))
-    bowMap.join(lab, Seq("doc_id"))
-      .select(col("doc_id"), col("y"),
+    hashedBowRows(docs)
+      .select(col("doc_id"),
+        (qualityScore(col("text"), stopwords) >= 0.5).cast("long").as("y"),
         concat(
-          transform(sequence(lit(0L), lit(63L)), b =>
-            coalesce(element_at(col("m"), b), lit(0L)).cast("double")
-              / col("n_tok").cast("double")),
-          col("fs")).as("xs"))
+          // n_tok = Σ cnt, bound once by the fold's finish lambda
+          aggregate(col("cnt"), lit(0L), (n, c) => n + c, nTok =>
+            transform(col("cnt"), c => c.cast("double") / nTok.cast("double"))),
+          array(lenScore, punctOk, stopOk, lit(1.0))).as("xs"))
   }
 
   /** A weight RELATION (bucket, wb — the registry/store schema)
@@ -877,9 +860,8 @@ object TrainingDataClassifier {
     * former `aggregate`. Emits (doc_id, y, xs, pqs) with pqs the
     * step-ordered 1e-6-quantized P(y=1) per snapshot; the TRUE-LABEL
     * ptq of [[trajPtqs]] is (y==1 ? pq : 1e6−pq), applied by each
-    * consumer. A ws/xs length mismatch now fails loudly
-    * (ArrayIndexOutOfBounds) instead of the former zip_with
-    * null-padding — a wrong width fails instead. */
+    * consumer. A ws/xs width mismatch fails the task
+    * ([[denseXs]]) instead of the former zip_with null-padding. */
   private[graft] def trajPqRows(tf: DataFrame, traj: DataFrame)
       : org.apache.spark.rdd.RDD[(Long, Long, Array[Double], Array[Long])] = {
     val snaps = trajSnapsOf(traj)
@@ -891,6 +873,7 @@ object TrainingDataClassifier {
         var i = 0
         while (i < snaps.length) {
           val ws = snaps(i)
+          denseXs(xs, ws.length)
           var zq = 0L
           var b = 0
           while (b < ws.length) { zq += rndQ(ws(b) * xs(b) * 1e9); b += 1 }
@@ -900,6 +883,16 @@ object TrainingDataClassifier {
         }
         (docId, y, xs, pqs)
       }
+  }
+
+  /** The dense-width contract of the task-side folds: `xs` itself,
+    * or a task failure naming both widths unless it is exactly as
+    * wide as the weights (a wider row would be silently truncated, a
+    * narrower one would index past its end). */
+  private def denseXs(xs: Array[Double], width: Int): Array[Double] = {
+    if (xs.length != width) throw new IllegalArgumentException(
+      s"feature row xs is ${xs.length} wide, weights are $width wide")
+    xs
   }
 
   /** Registry-weight LOGITS of a feature table under the trainer's
@@ -963,7 +956,7 @@ object TrainingDataClassifier {
     // its own job (full-batch GD is data-dependent per step), but a
     // step is now exactly one.
     val rdd = tf.select(col("y"), col("xs")).queryExecution.toRdd
-      .map(r => (r.getLong(0), r.getArray(1).toDoubleArray()))
+      .map(r => (r.getLong(0), denseXs(r.getArray(1).toDoubleArray(), dFeat)))
     var w = Array.fill(dFeat)(0.0)
     for (_ <- 1 to iters) {
       val wl = w

@@ -121,9 +121,9 @@ object TrainingDataDedup {
       .orderBy(col("id_a"), col("id_b"))
 
   /** 16-bit hash of a token: the top 4 hex digits of its md5 prefix
-    * ([[graft.dedup.NearDup.md5Hash32At]] shifted down 16 bits). */
+    * ([[graft.dedup.NearDup.md5Hash32]] shifted down 16 bits). */
   private def md5Hash16(c: Column): Column =
-    shiftright(graft.dedup.NearDup.md5Hash32At(c, 1), 16)
+    shiftright(graft.dedup.NearDup.md5Hash32(c), 16)
 
   /** X3: SimHash signatures (16-bit): per-bit ±1 votes over distinct
     * tokens, sign → bit. Same computation expressed in the oracle SQL. */
@@ -147,8 +147,8 @@ object TrainingDataDedup {
     * bitwise (a single positional sum of 16 hex digits would overflow
     * signed 64-bit arithmetic at digit 15 × 16^15). */
   private def md5Hash64(c: Column): Column =
-    shiftleft(graft.dedup.NearDup.md5Hash32At(c, 1), 32)
-      .bitwiseOR(graft.dedup.NearDup.md5Hash32At(c, 9))
+    shiftleft(graft.dedup.NearDup.md5Hash32(c), 32)
+      .bitwiseOR(graft.functions.TextHashExpressions.md5Hash32At(c, 9))
 
   /** Width-parameterized simhash signature per doc over the dedup
     * corpus: per-bit ±1 votes over distinct tokens, sign → bit. The

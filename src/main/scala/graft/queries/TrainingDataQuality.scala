@@ -1343,12 +1343,11 @@ object TrainingDataQuality {
     * embedding width) and the doc's paired embedding, swept over a
     * threshold grid per source (x105's one-pass curve shape — the
     * whole policy table from ONE scoring pass). Shape: one documents
-    * scan → (doc, bucket) TF aggregation (map-side combinable, ≤64
-    * rows/doc); embeddings exploded once and joined on
-    * (id, bucket) — the sparse dot never replicates full vectors per
-    * token row; norms are a BIGINT sum (text side) and a row-local
-    * ordered fold (vector side). Determinism: every per-doc sum is
-    * an order-free BIGINT of 1e6-quantized products (groupBy double
+    * scan → per-doc 64-bucket TF array (the hashed-BOW kernel, no
+    * shuffle), joined to the embeddings on the doc id, the dot a
+    * row-local fold; norms are a BIGINT sum (text side) and a
+    * row-local ordered fold (vector side). Determinism: every per-doc
+    * sum is an order-free BIGINT of 1e6-quantized products (groupBy double
     * sums are partition-order-dependent — the x39 recipe); the final
     * cosine is one identical double chain both engines run on those
     * integers. Docs with no tokens or no paired vector drop (inner
@@ -1360,27 +1359,16 @@ object TrainingDataQuality {
     * vectors. The dense dot needs 64-wide embeddings: any other width
     * raises an in-plan error, where zip_with would null-pad it. */
   private[graft] def alignmentScoreOn(docs: DataFrame, emb: DataFrame): DataFrame = {
-    // r11: per-doc bucket counts pivot to ONE dense
-    // 64-long array (the clfFeatures recipe), so the dot product folds
-    // row-locally inside a single doc-keyed join — the former
-    // 64×|corpus| embedding explode and the (doc_id, bucket) join are
-    // gone, and nt2 rides the same aggregation instead of a third
-    // join. Absent buckets contribute round(0·e·1e6) = 0, the exact
-    // integer the sparse join never summed — dotq is bit-identical.
-    val arr = docs
+    // per-doc bucket counts as ONE dense 64-long array from the
+    // hashed-BOW kernel (the clfFeatures recipe: one projection, no
+    // shuffle), so the dot product folds row-locally inside a single
+    // doc-keyed join and nt2 derives from the same counts. Absent
+    // buckets contribute round(0·e·1e6) = 0, the exact integer a
+    // sparse (doc, bucket) join never summed — dotq is bit-identical.
+    val arr = hashedBowRows(docs)
       .select(col("doc_id"), col("source"),
-        explode(wsTokens(lower(col("text")))).as("w"))
-      .filter(col("w") =!= "")
-      .groupBy(col("doc_id"), col("source"),
-        pmod(graft.dedup.NearDup.md5Hash32(col("w")), lit(64L)).as("bucket"))
-      .agg(count(lit(1)).as("cnt"))
-      .groupBy(col("doc_id"), col("source"))
-      .agg(map_from_entries(collect_list(struct(col("bucket"), col("cnt"))))
-          .as("m"),
-        sum(col("cnt") * col("cnt")).as("nt2"))
-      .select(col("doc_id"), col("source"), col("nt2"),
-        transform(sequence(lit(0L), lit(63L)),
-          b => coalesce(element_at(col("m"), b), lit(0L))).as("cs"))
+        aggregate(col("cnt"), lit(0L), (acc, c) => acc + c * c).as("nt2"),
+        col("cnt").as("cs"))
     val scored = arr
       .join(emb.select(col("vec_id").as("doc_id"),
         when(size(col("embedding")) === 64, col("embedding"))

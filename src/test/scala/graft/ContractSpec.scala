@@ -44,4 +44,22 @@ class ContractSpec extends AnyFunSuite {
     assert(warm.errors == Seq("d") && warm.perQuery == Seq("a" -> 1.0))
     assert(warm.passTotals == Seq(1.0))
   }
+
+  test("Verify: a query that throws is named in verify_errors.json, the rest still run") {
+    type Q = (SparkSession, String) => DataFrame
+    val ok: Q = (s, _) => s.range(3).toDF()
+    val throwsInPlan: Q =
+      (s, _) => s.range(3).filter(raise_error(lit("boom")).isNull).toDF()
+    val out = java.nio.file.Files.createTempDirectory("verify_out").toString
+    val errors = Verify.runQueries(spark, TestSpark.sf, out,
+      Seq("ok1" -> ok, "bad" -> throwsInPlan, "ok2" -> ok))
+    assert(errors.map(_._1) == Seq("bad"))
+    assert(errors.head._2.startsWith("org.apache.spark.") && errors.head._2.contains("boom"),
+      errors.head._2)
+    for (name <- Seq("ok1", "ok2"))
+      assert(spark.read.parquet(s"$out/$name").count() == 3, name)
+    assert(Verify.jsonObject(Nil) == "{}")
+    assert(Verify.jsonObject(Seq("q" -> "java.lang.RuntimeException: a \"b\"\n\tc")) ==
+      "{\"q\": \"java.lang.RuntimeException: a \\\"b\\\"\\n\\tc\"}")
+  }
 }

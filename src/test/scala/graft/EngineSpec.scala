@@ -3889,6 +3889,35 @@ class EngineSpec extends AnyFunSuite {
     assert(TrainingDataClassifier.clfScores(tf, wdf).filter(col("pq").isNull).count() == 0)
   }
 
+  test("a feature row wider or narrower than the weights fails the task-side folds") {
+    import spark.implicits._
+    val traj = spark.read.parquet(TrainingDataClassifier.ensureClfTrajectory(spark, sf))
+    def tfOf(width: Int) = Seq((1L, 1L, Seq.fill(width)(0.01)),
+      (2L, 0L, Seq.fill(68)(0.02))).toDF("doc_id", "y", "xs")
+    def failure(run: => Any): String = {
+      val e = intercept[Exception](run)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .flatMap(t => Option(t.getMessage)).find(_.contains(" wide"))
+        .getOrElse(fail(s"no width error in $e"))
+    }
+    for (w <- Seq(69, 67)) {
+      val msg = s"feature row xs is $w wide, weights are 68 wide"
+      assert(failure(TrainingDataClassifier.trainQualityClf(tfOf(w), 2L, iters = 1))
+        .contains(msg), s"trainer, width $w")
+      assert(failure(TrainingDataClassifier.trajPqRows(tfOf(w), traj).collect())
+        .contains(msg), s"trajectory fold, width $w")
+    }
+    assert(TrainingDataClassifier.trainQualityClf(tfOf(68), 2L, iters = 1).length == 68)
+    assert(TrainingDataClassifier.trajPqRows(tfOf(68), traj).count() == 2)
+  }
+
+  test("x108's build runs a pinned number of Spark jobs") {
+    val x108 = SparkEntry.queries("x108_quality_classifier")
+    x108(spark, sf) // count a warm build: a suite's first table read may add jobs
+    val (_, jobs) = JobCount(spark)(x108(spark, sf))
+    assert(jobs == 21, s"x108 build jobs: $jobs")
+  }
+
   test("x111 fails in-plan on an embedding that is not 64 wide") {
     import spark.implicits._
     val docs = Seq((1L, "web", "alpha beta gamma"), (2L, "web", "beta delta"))

@@ -115,10 +115,13 @@ class PropertySpec extends AnyFunSuite {
     val n = 64
     val nodes = (0 until n).map(_.toLong).toDF("id")
     val path = (0 until n - 1).map(i => (i.toLong, i + 1L)).toDF("src", "dst")
-    val (labels, rounds) =
-      graft.plans.ConnectedComponents.minLabelWithRounds(nodes, path)
+    val ((labels, rounds), jobs) = JobCount(spark)(
+      graft.plans.ConnectedComponents.minLabelWithRounds(nodes, path))
     assert(labels.collect().forall(_.getLong(1) == 0L))
     assert(rounds <= 16, s"expected O(log n) rounds, got $rounds")
+    // pinned exactly: the observed convergence count must neither exit
+    // early nor run past the fixpoint, and no round may pay an extra job
+    assert((rounds, jobs) == ((7, 50)), "(rounds, jobs)")
   }
 
   test("property: 64-bit simhash banded blocking is lossless for hamming <= 3") {
