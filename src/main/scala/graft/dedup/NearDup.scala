@@ -1,7 +1,8 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
+import graft.functions.Md5Hash32
 import graft.text.TextFunctions._
 
 /** The near-duplicate detection stack as a reusable library facade —
@@ -28,13 +29,14 @@ import graft.text.TextFunctions._
   */
 object NearDup {
 
-  /** 32-bit md5-prefix hash of a string column: the first 8 hex
-    * digits of md5(c), parsed natively
-    * ([[graft.functions.TextHashExpressions.md5Hash32At]]) — the hash
-    * every md5-derived bucket in the engine builds on (cross-engine
-    * oracle contract: the DuckDB mirrors parse the same positions). */
-  private[graft] def md5Hash32(c: Column): Column =
-    graft.functions.TextHashExpressions.md5Hash32At(c, 1)
+  /** Hex digits start..start+7 (1-based) of md5(c) as a 32-bit value,
+    * null in, null out — the ONE hash every md5-derived bucket in the
+    * engine builds on (cross-engine oracle contract: the DuckDB
+    * mirrors parse the same positions). */
+  private[graft] def md5Hash32(c: Column, start: Int = 1): Column = {
+    require(start >= 1 && start <= 25, s"md5 hex offset $start is not in 1..25")
+    GraftBridge.toColumn(Md5Hash32(GraftBridge.toExpression(c), start))
+  }
 
   /** Exact dedup: hash-groupBy on the normalized-text fingerprint,
     * keep the minimum id (`ETL`-style first-wins). Shuffles only
@@ -407,13 +409,9 @@ object NearDup {
       shingleN: Int = 3): DataFrame = {
     import scala.jdk.CollectionConverters._
     val params = minhashParams(numHashes)
-    // Base hash in a flat codegen'd Project, NOT a per-row array
-    // fold: inside a higher-order-function lambda the 8 hex-digit
-    // parses of md5Hash32 each re-evaluate the md5 (interpreted, no
-    // common-subexpression elimination) — measured 20× slower than
-    // this explode + codegen-CSE shape on the same corpus. The
-    // explode stays row-local; the shuffle is still only the
-    // map-side-combined |sources|×k partial mins.
+    // base hash in a flat codegen'd Project over the row-local
+    // explode; the shuffle is only the map-side-combined |sources|×k
+    // partial mins
     val hcols = params.zipWithIndex.map { case ((a, b), j) =>
       min((col("h") * lit(a) + lit(b)) % lit(minhashPrime)).as(s"h$j")
     }

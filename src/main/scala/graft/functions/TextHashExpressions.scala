@@ -10,21 +10,17 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType, StringType}
 
-/** Native md5-prefix hashing and the hashed bag-of-words kernel on it.
-  * `md5_hash32(c, start)` is the 32-bit value of the hex digits
-  * start..start+7 (1-based) of md5(c) — the positional parse the
-  * DuckDB oracle mirrors ([[graft.queries.TrainingData.md5Hash32Sql]])
-  * — read off the digest bytes. `hashed_bow(tokens)` is one row's 64
-  * bucket counts, count(b) = #{non-empty tokens w : md5_hash32(w, 1)
-  * mod 64 = b}: one per-row loop where a featurizer would otherwise
-  * explode, groupBy(doc, bucket) and groupBy(doc). */
+/** Native md5-prefix hashing ([[Md5Hash32]], behind
+  * [[graft.dedup.NearDup.md5Hash32]]) and the hashed bag-of-words
+  * kernel on it: `hashed_bow(tokens)` is one row's 64 bucket counts,
+  * count(b) = #{non-empty tokens w : md5Hash32(w) mod 64 = b}. */
 object TextHashExpressions {
   // MessageDigest is stateful; one per task thread
   private val md5 = ThreadLocal.withInitial[MessageDigest](
     () => MessageDigest.getInstance("MD5"))
 
-  /** Hex digit k of the digest is the high nibble of byte k/2 for
-    * even k, its low nibble for odd k. */
+  /** Hex digits start..start+7 (1-based) of md5(bytes) as a long;
+    * digit k is the high nibble of byte k/2 for even k, else its low. */
   def md5Hash32At(bytes: Array[Byte], start: Int): Long = {
     val d = md5.get.digest(bytes)
     var v = 0L
@@ -48,13 +44,6 @@ object TextHashExpressions {
       i += 1
     }
     UnsafeArrayData.fromPrimitiveArray(cnt)
-  }
-
-  /** md5 hex digits start..start+7 of a string or binary column as a
-    * non-negative long; null in, null out. */
-  def md5Hash32At(c: Column, start: Int): Column = {
-    require(start >= 1 && start <= 25, s"md5 hex offset $start is not in 1..25")
-    GraftBridge.toColumn(Md5Hash32(GraftBridge.toExpression(c), start))
   }
 
   /** The 64 bucket counts of an `array<string>` column. */

@@ -18,15 +18,12 @@ import org.apache.spark.sql.functions._
   * chained component A~B~C~… is exactly the case that shows up, and
   * PropertySpec pins the round bound on a path graph.
   *
-  * `localCheckpoint` EVERY round, and the convergence count rides
-  * it: the round's changed-label count is a `Dataset.observe` metric
-  * on the very plan the checkpoint materializes, read back from that
-  * execution — the round's single full evaluation is also its count,
-  * with no separate `count()` job over the cached blocks. Only
-  * (id, label) is checkpointed; the old label the count compares
-  * against is never stored. The loop exits at the exact fixpoint, so
-  * labels equal the transitive closure (each node → min node id of
-  * its component).
+  * `localCheckpoint` EVERY round: the eager checkpoint is the round's
+  * one full evaluation, and its changed-label count is a
+  * `Dataset.observe` metric of that same execution (no separate
+  * `count()`); only (id, label) is stored. The loop exits at the
+  * exact fixpoint, so labels equal the transitive closure (each
+  * node → min node id of its component).
   *
   * Checkpoint blocks are freed AS THE LOOP RUNS: once round N's
   * checkpoint has materialized, round N-1's snapshot has no remaining
@@ -94,10 +91,9 @@ object ConnectedComponents {
       val next = nextRaw.localCheckpoint()
       changed = Option(nextRaw.queryExecution.observedMetrics("cc_changed")
         .getAs[java.lang.Long]("n")).fold(0L)(_.longValue)
-      // `next` is fully materialized and counted, so the previous
-      // round's snapshot has no remaining references — free it NOW,
-      // keeping live storage at adjacency + two label tables
-      // regardless of how many rounds the graph needs.
+      // `next` is materialized, so the previous round's snapshot has
+      // no remaining references — free it NOW, keeping live storage at
+      // adjacency + two label tables however many rounds run.
       freeCheckpoint(labels)
       labels = next
       round += 1

@@ -261,14 +261,11 @@ object TrainingData {
         UNION
         SELECT r.a, e.b FROM reach r JOIN edges2 e ON r.b = e.a)"""
 
-  /** The rows of `docs` with a non-empty lower-cased whitespace token,
-    * plus `cnt`, their 64 md5-bucket counts (the native
-    * [[graft.functions.TextHashExpressions.hashedBow]]): the bucket
-    * contract x108's features and x111's text vectors share. A text
-    * has a non-empty token iff it has a non-`\s` char (lower-casing
-    * never makes one whitespace); that test runs BEFORE the kernel,
-    * because a filter on the counts would be pushed below the
-    * projection as a second kernel call. Null texts drop. */
+  /** The rows of `docs` with a non-empty lower-cased token, plus
+    * `cnt`, their 64 md5-bucket counts: x108's and x111's shared bucket
+    * contract. Tested on the text (non-empty token ⇔ a non-`\s` char)
+    * BEFORE the kernel: a filter on `cnt` would be pushed below the
+    * projection as a second kernel call. */
   private[queries] def hashedBowRows(docs: DataFrame): DataFrame =
     docs.filter(col("text").rlike("\\S"))
       .withColumn("cnt", graft.functions.TextHashExpressions.hashedBow(

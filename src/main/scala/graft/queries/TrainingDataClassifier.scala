@@ -111,8 +111,7 @@ object TrainingDataClassifier {
     * weight table (exposed for the EngineSpec zero-variance pin). */
   private[graft] def gradientNoiseOn(s: SparkSession, tf: DataFrame,
       wdf: DataFrame): DataFrame = {
-    // dense rows: pq and the per-dim gradient terms are row-local (the
-    // former scored-join re-shuffle by doc_id is gone);
+    // dense rows: pq and the per-dim gradient terms are row-local;
     // the post-explode filter reconstructs exactly the sparse row set
     // (BOW buckets the doc fires — x > 0 — plus the always-present
     // side features 64-67), so n_dims keeps its meaning: buckets with
@@ -126,11 +125,9 @@ object TrainingDataClassifier {
           0).cast("long").as("gq"))
     // n (the feature-table row count) is derived IN-PLAN from the
     // bias bucket's row count — bucket 67 is lit(1.0) for every doc,
-    // so its gq count is exactly |tf| (r12:
-    // this retires the former eager localCheckpoint + count() pair;
-    // the whole query is one scan again). The former in-plan
-    // Σ(n·s2 − s1²) moves to exact driver-side BigInt via
-    // distributivity: t = n·Σs2 − Σs1² — identical integers.
+    // so its gq count is exactly |tf| and the query stays one scan.
+    // Σ(n·s2 − s1²) runs as exact driver-side BigInt via
+    // distributivity: t = n·Σs2 − Σs1².
     val per = g.groupBy(col("bucket"))
       .agg(sum(col("gq").cast("decimal(38,0)")).as("s1"),
         sum(col("gq").cast("decimal(38,0)") * col("gq")).as("s2"),
@@ -187,11 +184,8 @@ object TrainingDataClassifier {
     val docs = docs0.select(col("doc_id"), col("text"))
     val split = (docs.agg(max(col("doc_id"))).head().getLong(0) + 1L) / 2L
     val balde = splitBalde(col("doc_id"))
-    // ONE feature build (r12): the checkpointed full
-    // feature table feeds BOTH the train filter and the held-out
-    // scoring pass — the former shape checkpointed only the train
-    // side, so the test-side clfScores re-ran the whole clfFeatures
-    // chain (second corpus scan + two aggregations + join).
+    // ONE feature build: the checkpointed full feature table feeds
+    // BOTH the train filter and the held-out scoring pass
     val tfall = clfFeatures(docs).drop("y")
       .withColumn("y", when(col("doc_id") >= split, 1L).otherwise(0L))
       .localCheckpoint()
@@ -404,17 +398,12 @@ object TrainingDataClassifier {
     * are the trainer's own 1e-6-quantized σ; mean is an exact
     * integer rational; std's one sqrt seam is quantized after
     * evaluation on an exact-integer argument (k·Σp² − (Σp)²). Scale
-    * shape (r11): ONE dense-feature scan × the 1-row broadcast
-    * snapshot array — all 20 logits, σs and their moments fold
-    * row-locally, so the only shuffle is the ≤8-row region rollup. */
+    * shape: ONE dense-feature scan; all 20 logits, σs and their
+    * moments fold inside the task ([[trajPqRows]]), so the only
+    * shuffle is the ≤8-row region rollup. */
   val x157Cartography: Q = (s, d) => {
     val traj = s.read.parquet(ensureClfTrajectory(s, d))
     val (tf, _) = qualityClfTf(s, d)
-    // task-side compiled fold (r12 — [[trajPqRows]]): all
-    // 20 per-step logits, σs and their moments are computed inside the
-    // task in one pass, same integers as the former interpreted
-    // zip_with/aggregate column folds; no bucket-join, no doc-keyed
-    // shuffle — the only shuffle left is the ≤8-row region rollup.
     import s.implicits._
     val perDoc = trajPqRows(tf, traj).map { case (docId, y, _, pqs) =>
       val k = pqs.length.toLong
@@ -457,16 +446,12 @@ object TrainingDataClassifier {
     * step — x142's noise region), unforgettable docs (learned, zero
     * forgets), forgotten-at-least-once mass, mean and max forget
     * counts. All-integer off the trainer's own quantized σ; the
-    * step scan folds over one step-ordered array inside the row
-    * (r11 — bounded, never corpus-wide, no window exchange). */
+    * step scan folds over one step-ordered array inside the task
+    * ([[trajPqRows]]; bounded, no window exchange), so only the ≤2-row
+    * label rollup shuffles. */
   val x158ForgettingEvents: Q = (s, d) => {
     val traj = s.read.parquet(ensureClfTrajectory(s, d))
     val (tf, _) = qualityClfTf(s, d)
-    // task-side trajectory walk (r12 — [[trajPqRows]]):
-    // the per-step oks and the correct→incorrect transition scan run
-    // inside the task in one pass, same integers as the former
-    // interpreted column folds; no bucket-join, no per-doc window —
-    // only the ≤2-row label rollup shuffles.
     import s.implicits._
     val perDoc = trajPqRows(tf, traj).map { case (docId, y, _, pqs) =>
       var nOk = 0L; var forgets = 0L; var prevOk = false
@@ -513,19 +498,14 @@ object TrainingDataClassifier {
     * the (stage, region) cells proportional to token mass by exact
     * largest-remainder (x162's recipe: floor quotas + top remainders,
     * ties by (stage, region); Σ alloc = B EXACTLY, pinned in
-    * EngineSpec). Scale shape: x157's row-local trajectory scoring
-    * (r11) + one corpus token scan, collapsing onto ≤ 5 (stage,
-    * region) cells; the
-    * landing runs on that pinned tiny relation (b·n_tok stays in
+    * EngineSpec). Scale shape: x157's task-side trajectory scoring
+    * + one corpus token scan, collapsing onto ≤ 5 (stage, region)
+    * cells; the landing runs on that pinned tiny relation (b·n_tok stays in
     * Int64 up to ~10⁹-token corpora; production id widths promote the
     * quota products to decimal(38,0) — the Opq precedent). */
   val x168CurriculumSchedule: Q = (s, d) => {
     val traj = s.read.parquet(ensureClfTrajectory(s, d))
     val (tf, _) = qualityClfTf(s, d)
-    // task-side x157-shaped scoring (r12 —
-    // [[trajPqRows]]): moments and the learned-at-least-once count
-    // fold inside the task in one pass, same integers as the former
-    // interpreted column folds; no bucket-join, no doc-keyed shuffle.
     import s.implicits._
     val perDoc = trajPqRows(tf, traj).map { case (docId, y, _, pqs) =>
       val k = pqs.length.toLong
@@ -596,16 +576,11 @@ object TrainingDataClassifier {
     * re-quantized to 1e-6 before the product so everything stays in
     * BIGINT range (two-stage quantization, replayed identically by
     * the oracle). One dense-feature scan with all 20 snapshot scores
-    * and the feature mass folded row-locally (r11 — x157's shape);
-    * nothing pairwise. */
+    * and the feature mass ‖x‖² folded inside the task (x157's shape);
+    * nothing pairwise, only TakeOrdered(20) shuffles. */
   val x159TracinSelf: Q = (s, d) => {
     val traj = s.read.parquet(ensureClfTrajectory(s, d))
     val (tf, _) = qualityClfTf(s, d)
-    // task-side (r12 — [[trajPqRows]]): per-step dq² mass
-    // and the feature-mass ‖x‖² fold inside the task in one pass,
-    // same integers as the former interpreted column folds — the
-    // bucket-join, the doc-keyed re-aggregation AND the aMass⋈xsq
-    // join stay gone; only TakeOrdered(20) remains.
     import s.implicits._
     trajPqRows(tf, traj).map { case (docId, y, xs, pqs) =>
       var a = 0L
@@ -704,35 +679,25 @@ object TrainingDataClassifier {
     * stopword — buckets 64-66) and a bias (67), labelled by the
     * engine's [[qualityScore]] ≥ 0.5 gate. Returns (tf, nDocs);
     * docs with no tokens drop (inner semantics). Dense rows: nDocs
-    * is exactly the row count, observed by the checkpoint's own job
-    * (no separate count). Consumers whose downstream pins its
+    * is exactly the row count. Consumers whose downstream pins its
     * own materialization ride this too; the five single-plan SQL
     * scorers use [[clfTf1]]. */
   private[graft] def qualityClfTf(s: SparkSession, d: String): (DataFrame, Long) = {
-    val feats = clfFeatures(Tables.documents(s, d))
-      .observe("clf_tf_rows", count(lit(1)).as("n"))
-    val tf = feats.localCheckpoint()
-    (tf, feats.queryExecution.observedMetrics("clf_tf_rows").getLong(0))
+    val tf = clfFeatures(Tables.documents(s, d)).localCheckpoint()
+    (tf, tf.count())
   }
 
-  /** Single-pass feature table: NO checkpoint, NO count (optimization
-    * r12). For carriers that consume the features
-    * exactly once inside ONE adaptively-planned SQL job (the
-    * score-and-aggregate scorers x118/x122/x136/x163/x164): fusing the
-    * build into the consumer's own job drops the former eager
-    * localCheckpoint + count() pair (two jobs per carrier at the
-    * ~0.15 s job floor), avoids materializing a corpus-sized feature
-    * table a single-pass plan never re-reads, and runs the whole
-    * scan→features→score→rollup chain as ONE adaptively-planned job.
-    * Measured (isolated min-of-2, sf0.1, quiet box): x118 2.01→1.38,
-    * x122 1.35→0.41, x136 2.42→1.52, x163 1.21→0.44, x164 1.13→0.40.
+  /** Single-pass feature table: NO checkpoint, NO count. For
+    * carriers that consume the features exactly once inside ONE
+    * adaptively-planned SQL job (the score-and-aggregate scorers
+    * x118/x122/x136/x163/x164): the build rides the consumer's own
+    * job, with no eager localCheckpoint + count() pair and no
+    * corpus-sized feature table a single-pass plan never re-reads.
     * Deliberately NOT used by the carriers whose downstream pins its
     * own materialization barrier (x138/x150/x168 checkpoint a derived
     * table; x157/x158/x159 consume via queryExecution.toRdd): there
-    * the build executes inside a checkpoint/RDD materialization that
-    * does not get the final-stage adaptive replanning, and the same
-    * swap MEASURED SLOWER (x150 1.86→2.74, x138 1.54→2.14, x157
-    * 1.39→1.69) — those keep [[qualityClfTf]]. */
+    * the build misses the final-stage adaptive replanning and ran
+    * slower — those keep [[qualityClfTf]]. */
   private[graft] def clfTf1(s: SparkSession, d: String): DataFrame =
     clfFeatures(Tables.documents(s, d))
 
@@ -741,25 +706,14 @@ object TrainingDataClassifier {
     * the STREAMING admission gate
     * ([[graft.streaming.DocStream.admitQuality]]), so no consumer can
     * drift from the features the registry weights were trained on.
-    * ONE feature row per INPUT row: every caller's `doc_id` is a key
-    * (`documents`, the dedup corpora, stream batches), so that is one
-    * row per doc. Rows whose text is null or has no non-empty token
-    * produce no feature row (they carry no signal and no gate can
-    * score them).
-    *
-    * Representation: ONE DENSE row per doc — (doc_id, y,
-    * xs: array<double>[68]) with xs(b) = 0.0 for buckets the doc
-    * never fires. Every downstream logit/gradient is an integer sum
-    * whose absent-bucket terms are round(w·0·1e9) = 0, so scores,
-    * gradients and trained weights equal a sparse (doc, bucket)
-    * table's, while scoring and each GD step stay row-local folds.
-    *
-    * Build shape: ONE projection over one scan. The 64 bucket counts
-    * come from the native [[graft.functions.TextHashExpressions
-    * .hashedBow]] kernel (per row: md5-prefix bucket of every
-    * non-empty token, counted in place — no explode, no groupBy, no
-    * join; [[hashedBowRows]]), and xs(b) = cnt(b) / n_tok in
-    * double, n_tok the row's non-empty token count. */
+    * ONE feature row per INPUT row (every caller's `doc_id` is a key:
+    * `documents`, the dedup corpora, stream batches); a null text or
+    * one with no non-empty token gives no row. Dense: (doc_id, y,
+    * xs: array<double>[68]), xs(b) = cnt(b) / n_tok over the
+    * [[hashedBowRows]] counts, 0.0 where the doc never fires — every
+    * downstream logit/gradient term round(w·0·1e9) is then 0, so
+    * scoring and each GD step are row-local folds. One projection
+    * over one scan. */
   private[graft] def clfFeatures(docs: DataFrame): DataFrame = {
     val lenScore = least(tokenCount(col("text")).cast("double") / 50.0, lit(1.0))
     val punctOk = lit(1.0) - least(punctRatio(col("text")) * 5.0, lit(1.0))
@@ -768,7 +722,6 @@ object TrainingDataClassifier {
       .select(col("doc_id"),
         (qualityScore(col("text"), stopwords) >= 0.5).cast("long").as("y"),
         concat(
-          // n_tok = Σ cnt, bound once by the fold's finish lambda
           aggregate(col("cnt"), lit(0L), (n, c) => n + c, nTok =>
             transform(col("cnt"), c => c.cast("double") / nTok.cast("double"))),
           array(lenScore, punctOk, stopOk, lit(1.0))).as("xs"))
@@ -795,8 +748,7 @@ object TrainingDataClassifier {
 
   /** The dense-row logit under the trainer's exact quantization
     * contract: Σ_b round(ws(b)·xs(b)·1e9) as one row-local exact
-    * integer fold — the same integer the former sparse per-bucket sum
-    * produced (absent buckets contribute round(w·0·1e9) = 0). */
+    * integer fold (absent buckets contribute round(w·0·1e9) = 0). */
   private[graft] def zqOf(xs: Column, ws: Column): Column =
     aggregate(
       zip_with(ws, xs, (w, x) => round(w * x * lit(1e9), 0).cast("long")),
@@ -846,22 +798,17 @@ object TrainingDataClassifier {
       .map { case (_, rows) =>
         rows.sortBy(_.getLong(1)).map(_.getDouble(2)) }
 
-  /** Per-doc trajectory scoring, TASK-SIDE (r12 — the
+  /** Per-doc trajectory scoring, TASK-SIDE (the
     * [[trainQualityClfSteps]] shape): one compiled fold per dense
-    * feature row replaces the interpreted zip_with/aggregate lambda
-    * chains of the former row-local column expressions (a Catalyst
-    * higher-order function never enters whole-stage codegen, so each
-    * of the 20×68 per-row terms paid interpreted-lambda and boxing
-    * overhead on top of its arithmetic). The integers are identical:
+    * feature row (a Catalyst higher-order function never enters
+    * whole-stage codegen). The integers equal the column chain's:
     * [[rndQ]] IS Spark's round(x,0).cast(long) (EngineSpec-pinned),
     * exp is the same java.lang.Math.exp codegen calls, operand order
     * ws(b)·xs(b)·1e9 and the σ chain match [[zqOf]]/[[pqOf]]
-    * verbatim, and the fold runs left-to-right exactly like the
-    * former `aggregate`. Emits (doc_id, y, xs, pqs) with pqs the
+    * verbatim, and the fold runs left-to-right like `aggregate`. Emits (doc_id, y, xs, pqs) with pqs the
     * step-ordered 1e-6-quantized P(y=1) per snapshot; the TRUE-LABEL
     * ptq of [[trajPtqs]] is (y==1 ? pq : 1e6−pq), applied by each
-    * consumer. A ws/xs width mismatch fails the task
-    * ([[denseXs]]) instead of the former zip_with null-padding. */
+    * consumer. A ws/xs width mismatch fails the task ([[denseXs]]). */
   private[graft] def trajPqRows(tf: DataFrame, traj: DataFrame)
       : org.apache.spark.rdd.RDD[(Long, Long, Array[Double], Array[Long])] = {
     val snaps = trajSnapsOf(traj)
@@ -885,13 +832,10 @@ object TrainingDataClassifier {
       }
   }
 
-  /** The dense-width contract of the task-side folds: `xs` itself,
-    * or a task failure naming both widths unless it is exactly as
-    * wide as the weights (a wider row would be silently truncated, a
-    * narrower one would index past its end). */
+  /** `xs`, or a task failure naming both widths unless it is exactly
+    * as wide as the weights the task-side folds index it by. */
   private def denseXs(xs: Array[Double], width: Int): Array[Double] = {
-    if (xs.length != width) throw new IllegalArgumentException(
-      s"feature row xs is ${xs.length} wide, weights are $width wide")
+    require(xs.length == width, s"feature row xs is ${xs.length} wide, weights are $width wide")
     xs
   }
 
@@ -917,7 +861,7 @@ object TrainingDataClassifier {
           .cast("long").as("pq"))
 
   /** x108's trainer: full-batch logistic-regression gradient descent
-    * over the sparse feature table — `iters` steps at learning rate
+    * over the dense feature table — `iters` steps at learning rate
     * `eta`, weights driver-pinned between steps (the k-means shape:
     * model on the driver, data distributed). Determinism: per-doc
     * logits and per-bucket gradients are order-free BIGINT sums of
@@ -940,21 +884,14 @@ object TrainingDataClassifier {
       dFeat: Int = 68, iters: Int = 20,
       eta: Double = 16.0): Seq[Array[Double]] = {
     val out = Seq.newBuilder[Array[Double]]
-    // ONE job per GD step (r12): the gradient is an
-    // order-free per-dim BIGINT sum, so each step rides a single RDD
-    // aggregate over the checkpointed feature rows — task results
-    // carry dFeat longs straight back to the driver, with no exchange
-    // and no per-step AQE stage job (the former SQL shape ran a
-    // 2-stage job per step: posexplode → 68-key shuffle → collect;
-    // measured 2 scheduler round-trips per step at the ~0.2 s/job
-    // floor, which dominated x108/x175 at bench scale). The plan is
-    // resolved ONCE — the 20 steps re-run one pinned RDD chain
-    // instead of re-analyzing a fresh Dataset per step. Per-row math
+    // ONE job per GD step: the gradient is an order-free per-dim
+    // BIGINT sum, so each step is a single RDD aggregate over the
+    // checkpointed feature rows — task results carry dFeat longs
+    // straight to the driver, with no exchange. The plan is resolved
+    // ONCE; the 20 steps re-run one pinned RDD chain. Per-row math
     // replicates the SQL chain exactly ([[rndQ]]; exp is the same
     // java.lang.Math.exp on both paths), so logits, σ, gradients and
-    // the trained weights stay bit-identical — every step still needs
-    // its own job (full-batch GD is data-dependent per step), but a
-    // step is now exactly one.
+    // the trained weights are bit-identical to it.
     val rdd = tf.select(col("y"), col("xs")).queryExecution.toRdd
       .map(r => (r.getLong(0), denseXs(r.getArray(1).toDoubleArray(), dFeat)))
     var w = Array.fill(dFeat)(0.0)
@@ -1010,10 +947,8 @@ object TrainingDataClassifier {
     * shape: ONE corpus scan builds the dense feature table
     * (localCheckpointed; at 100 TB features are staged ingest
     * columns — the x32b contract), then every GD step is one
-    * row-local scan of that table onto a single 68-key map-side-
-    * combinable integer aggregation (r11 — the former per-step
-    * doc-keyed logit shuffle + gradient join-back are gone)
-    * and moves 68 numbers to the driver; cost scales with corpus
+    * row-local scan of that table onto a single 68-key integer
+    * aggregation and moves 68 numbers to the driver; cost scales with corpus
     * size × iters, never corpus². EngineSpec pins sign/accuracy on a
     * crafted separable micro-set AND accuracy > majority base rate
     * on the corpus. */

@@ -147,8 +147,8 @@ object TrainingDataDedup {
     * bitwise (a single positional sum of 16 hex digits would overflow
     * signed 64-bit arithmetic at digit 15 × 16^15). */
   private def md5Hash64(c: Column): Column =
-    shiftleft(graft.dedup.NearDup.md5Hash32(c), 32)
-      .bitwiseOR(graft.functions.TextHashExpressions.md5Hash32At(c, 9))
+    shiftleft(graft.dedup.NearDup.md5Hash32(c, 1), 32)
+      .bitwiseOR(graft.dedup.NearDup.md5Hash32(c, 9))
 
   /** Width-parameterized simhash signature per doc over the dedup
     * corpus: per-bit ±1 votes over distinct tokens, sign → bit. The

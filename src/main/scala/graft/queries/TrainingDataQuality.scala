@@ -1251,18 +1251,13 @@ object TrainingDataQuality {
     * construction); the deviation pass rides the broadcast median
     * table. Everything integer until the presentation columns. */
   val x130QualityMad: Q = (s, d) => {
-    // ONE corpus scan (optimization r12 — shuffle counts,
-    // not payloads): every downstream statistic — both nearest-rank
+    // ONE corpus scan: every downstream statistic — both nearest-rank
     // medians, the deviation distribution and the outlier rollup — is
     // a pure function of the bounded (source, q4) count histogram
-    // (≤ 10⁴+1 rows per source), so the histogram is computed once and
-    // pinned (the x131 scored-table precedent; bounded, never
-    // corpus-sized) and every pass folds IT. The former shape
-    // re-executed the corpus scan + qualityScore (≈7 regex passes per
-    // doc) THREE times: the median histogram, the per-doc deviation
-    // pass, and the final rollup. A doc's deviation |q4 − med| depends
-    // only on its q4 bucket, so the deviation distribution is the same
-    // histogram re-keyed: identical integer counts, identical medians.
+    // (≤ 10⁴+1 rows per source), so the histogram is computed once,
+    // pinned, and every pass folds IT. A doc's deviation |q4 − med|
+    // depends only on its q4 bucket, so the deviation distribution is
+    // the same histogram re-keyed.
     val hist = Tables.documents(s, d)
       .select(col("source"),
         round(qualityScore(col("text"), stopwords) * 1e4, 0)
@@ -1343,11 +1338,10 @@ object TrainingDataQuality {
     * embedding width) and the doc's paired embedding, swept over a
     * threshold grid per source (x105's one-pass curve shape — the
     * whole policy table from ONE scoring pass). Shape: one documents
-    * scan → per-doc 64-bucket TF array (the hashed-BOW kernel, no
-    * shuffle), joined to the embeddings on the doc id, the dot a
-    * row-local fold; norms are a BIGINT sum (text side) and a
-    * row-local ordered fold (vector side). Determinism: every per-doc
-    * sum is an order-free BIGINT of 1e6-quantized products (groupBy double
+    * scan → per-doc 64-bucket TF array ([[hashedBowRows]], no
+    * shuffle) joined to the embeddings on the doc id; the dot and both
+    * norms are row-local folds. Determinism: every per-doc sum is an
+    * order-free BIGINT of 1e6-quantized products (groupBy double
     * sums are partition-order-dependent — the x39 recipe); the final
     * cosine is one identical double chain both engines run on those
     * integers. Docs with no tokens or no paired vector drop (inner
@@ -1359,12 +1353,8 @@ object TrainingDataQuality {
     * vectors. The dense dot needs 64-wide embeddings: any other width
     * raises an in-plan error, where zip_with would null-pad it. */
   private[graft] def alignmentScoreOn(docs: DataFrame, emb: DataFrame): DataFrame = {
-    // per-doc bucket counts as ONE dense 64-long array from the
-    // hashed-BOW kernel (the clfFeatures recipe: one projection, no
-    // shuffle), so the dot product folds row-locally inside a single
-    // doc-keyed join and nt2 derives from the same counts. Absent
-    // buckets contribute round(0·e·1e6) = 0, the exact integer a
-    // sparse (doc, bucket) join never summed — dotq is bit-identical.
+    // dense 64-long counts: the dot folds row-locally inside one
+    // doc-keyed join; absent buckets contribute round(0·e·1e6) = 0
     val arr = hashedBowRows(docs)
       .select(col("doc_id"), col("source"),
         aggregate(col("cnt"), lit(0L), (acc, c) => acc + c * c).as("nt2"),

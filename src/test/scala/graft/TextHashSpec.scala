@@ -93,7 +93,7 @@ class TextHashSpec extends AnyFunSuite {
       _.collect { case h: HashedBow => h })).size == 1, plan.toString)
   }
 
-  test("native md5Hash32At equals the substring/instr chain at offsets 1 and 9") {
+  test("native md5Hash32 equals the substring/instr chain at offsets 1 and 9") {
     val rnd = new scala.util.Random(7)
     val alphabet = "abcxyzABC019 ,.-áçãõéüñ東京€".toCharArray
     val strs: Seq[String] = Seq("", " ", "ação", "🙂", "\u0000") ++
@@ -101,7 +101,7 @@ class TextHashSpec extends AnyFunSuite {
         alphabet(rnd.nextInt(alphabet.length))).mkString)
     val df = (strs.map(Option(_)) :+ None).toDF("s")
     val cols = Seq(1, 9).flatMap(k => Seq(
-      TextHashExpressions.md5Hash32At(col("s"), k), md5Hash32AtRef(col("s"), k)))
+      graft.dedup.NearDup.md5Hash32(col("s"), k), md5Hash32AtRef(col("s"), k)))
     val rows = df.select(cols: _*).collect()
     assert(rows.length == 10001)
     rows.init.foreach { r =>

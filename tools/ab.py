@@ -107,12 +107,8 @@ def main():
     ap.add_argument("--log", help="JSONL file every run is appended to")
     ap.add_argument("--summarize", metavar="LOG",
                     help="only print the summary of an existing log")
-    ap.add_argument("--benchmark-json",
-                    help="BENCHMARK.json naming metric directions "
-                         "(default: the change checkout's, else ./BENCHMARK.json)")
     a = ap.parse_args()
-    bench = a.benchmark_json or str(Path(a.change or ".") / "BENCHMARK.json")
-    lower = better_lower(bench)
+    lower = better_lower(str(Path(a.change or ".") / "BENCHMARK.json"))
     if a.summarize:
         records = [json.loads(l) for l in Path(a.summarize).read_text().splitlines() if l]
         summarize(records, lower)
