@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One-call onboarding for a session that wasn't started with
   * `spark.sql.extensions=graft.GraftExtensions` (notebooks, tests,
   * existing apps): registers the engine's SQL functions
-  * (`cosine_sim`, `repair_encoding`), the sort-free TopKPerGroup
+  * ([[GraftExtensions.functions]]), the sort-free TopKPerGroup
   * planner strategy, and — when a data directory is given — the
   * table views, so both the DataFrame API and reference-style
   * `spark.sql` text work immediately. Idempotent.
@@ -14,8 +14,10 @@ object Graft {
 
   /** Engine functions + planner strategy only. */
   def init(spark: SparkSession): Unit = {
-    graft.functions.VectorExpressions.register(spark)
-    graft.functions.EncodingRepair.register(spark)
+    GraftExtensions.functions.foreach { case (name, _, build) =>
+      spark.sessionState.functionRegistry
+        .createOrReplaceTempFunction(name, build, "scala_udf")
+    }
     org.apache.spark.sql.GraftBridge.ensureStrategy(spark, graft.plans.TopKStrategy)
   }
 

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.CosineSimilarity
+import graft.functions.{CosineSimilarity, DeflateRatio, RepairEncoding}
 
 /** SparkSessionExtensions entry point: injects the engine's native
   * expressions into any session via config —
@@ -16,20 +16,20 @@ import graft.functions.CosineSimilarity
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("repair_encoding"),
-      new ExpressionInfo(
-        classOf[graft.functions.RepairEncoding].getName, "repair_encoding"),
-      (exprs: Seq[Expression]) => graft.functions.RepairEncoding(exprs(0))))
-    ext.injectFunction((
-      new FunctionIdentifier("deflate_ratio"),
-      new ExpressionInfo(
-        classOf[graft.functions.DeflateRatio].getName, "deflate_ratio"),
-      (exprs: Seq[Expression]) => graft.functions.DeflateRatio(exprs(0))))
+    GraftExtensions.functions.foreach { case (name, cls, build) =>
+      ext.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
   }
+}
+
+object GraftExtensions {
+  /** The engine's SQL functions as (name, expression class, factory):
+    * the one list both the extensions config and [[Graft.init]]
+    * register. */
+  val functions: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    ("cosine_sim", classOf[CosineSimilarity], e => CosineSimilarity(e(0), e(1))),
+    ("repair_encoding", classOf[RepairEncoding], e => RepairEncoding(e(0))),
+    ("deflate_ratio", classOf[DeflateRatio], e => DeflateRatio(e(0))))
 }

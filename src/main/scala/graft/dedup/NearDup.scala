@@ -407,7 +407,6 @@ object NearDup {
     * quotient binary-exact for the cross-engine oracle). */
   def sourceMinhashOverlap(docs: DataFrame, numHashes: Int = 16,
       shingleN: Int = 3): DataFrame = {
-    import scala.jdk.CollectionConverters._
     val params = minhashParams(numHashes)
     // base hash in a flat codegen'd Project over the row-local
     // explode; the shuffle is only the map-side-combined |sources|×k
@@ -420,8 +419,7 @@ object NearDup {
       .select(col("source"), explode(shinglesOfToks(col("toks"), shingleN)).as("sh"))
       .withColumn("h", md5Hash32(col("sh")))
       .groupBy(col("source")).agg(hcols.head, hcols.tail: _*)
-    val sig = docs.sparkSession.createDataFrame(
-      sigDf.collect().toSeq.asJava, sigDf.schema)
+    val sig = graft.core.Pin(sigDf)
     val a = sig.select(col("source").as("source_a") +:
       (0 until numHashes).map(j => col(s"h$j").as(s"a$j")): _*)
     val b = sig.select(col("source").as("source_b") +:

@@ -61,12 +61,6 @@ object EncodingRepair {
 
   def repair(c: Column): Column =
     GraftBridge.toColumn(RepairEncoding(GraftBridge.toExpression(c)))
-
-  /** Register `repair_encoding` for SQL-text use on a session (the
-    * extensions config path also registers it). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "repair_encoding", exprs => RepairEncoding(exprs(0)), "scala_udf")
 }
 
 /** `repair_encoding(string) → string` — see [[EncodingRepair]]. */

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -83,9 +82,4 @@ object VectorExpressions {
   def cosineSim(a: Column, b: Column): Column =
     GraftBridge.toColumn(CosineSimilarity(
       GraftBridge.toExpression(a), GraftBridge.toExpression(b)))
-
-  /** Register `cosine_sim` for SQL-text use on a session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
 }

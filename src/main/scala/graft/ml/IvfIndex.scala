@@ -3,6 +3,7 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Pin
 import graft.functions.VectorExpressions.cosineSim
 
 /** Reusable IVF (inverted-file) ANN index: TRAIN ONCE, QUERY MANY —
@@ -84,29 +85,23 @@ object IvfIndex {
           .as("ce"))
   }
 
-  /** Centroids are nCells rows by construction — pin them as a
-    * driver-local relation (the standard k-means shape: centroids
-    * live on the driver, vectors stay distributed). Without this,
-    * every downstream reference to the lazy plan (each Lloyd step's
-    * broadcast, the cell assignment, the query-probe broadcast)
-    * re-executes the whole training chain per action. */
-  private def pin(df: DataFrame): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    df.sparkSession.createDataFrame(df.collect().toSeq.asJava, df.schema)
-  }
-
   /** Build the index over `emb` (columns `vec_id`, `embedding`).
     * Seeds from the nCells LOWEST vec_ids (TakeOrdered, not a full
     * sort) — id spaces that are sparse or offset (e.g. post-dedup)
     * still yield a full quantizer; on a dense-from-0 corpus this is
     * identical to `vec_id < nCells` (the x13 oracle replays that).
     * Eager: each Lloyd step runs exactly once at build time and its
-    * 16-row output is pinned locally (see [[pin]]); only the cell
-    * assignment (the corpus-sized inverted file) stays lazy. */
+    * 16-row output is pinned driver-local ([[graft.core.Pin]]; the
+    * standard k-means shape: centroids live on the driver, vectors
+    * stay distributed). Without the pin, every downstream reference
+    * to the lazy plan (each Lloyd step's broadcast, the cell
+    * assignment, the query-probe broadcast) re-executes the whole
+    * training chain per action. Only the cell assignment (the
+    * corpus-sized inverted file) stays lazy. */
   def build(emb: DataFrame, nCells: Int, lloydIters: Int): Index = {
-    val seed = pin(emb.orderBy(col("vec_id")).limit(nCells)
+    val seed = Pin(emb.orderBy(col("vec_id")).limit(nCells)
       .select(col("vec_id").as("cid"), col("embedding").as("ce")))
-    val cents = (0 until lloydIters).foldLeft(seed)((c, _) => pin(lloydStep(emb, c)))
+    val cents = (0 until lloydIters).foldLeft(seed)((c, _) => Pin(lloydStep(emb, c)))
     Index(cents, assign(emb, cents))
   }
 

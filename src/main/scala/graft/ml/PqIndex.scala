@@ -2,6 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Pin
 
 /** Product quantization (Jégou et al. 2011, "Product Quantization for
   * Nearest Neighbor Search"): split each d-dim vector into `m`
@@ -110,21 +111,16 @@ object PqIndex {
           .as("ce"))
   }
 
-  private def pin(df: DataFrame): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    df.sparkSession.createDataFrame(df.collect().toSeq.asJava, df.schema)
-  }
-
   /** Train the codebook: per subspace, seed from the k lowest-id
     * vectors' subvectors and run `iters` Lloyd steps. Returns the
     * pinned (m, cid, ce) table — m·k rows, corpus-size-free. */
   def trainCodebook(emb: DataFrame, m: Int = 8, dsub: Int = 8,
       k: Int = 16, iters: Int = 2): DataFrame = {
     val sub = subvectors(emb, m, dsub)
-    val seed = pin(sub.filter(col("vec_id") < k)
+    val seed = Pin(sub.filter(col("vec_id") < k)
       .select(col("m"), col("vec_id").cast("int").as("cid"),
         col("sub").as("ce")))
-    (0 until iters).foldLeft(seed)((c, _) => pin(recenter(assign(sub, c), dsub)))
+    (0 until iters).foldLeft(seed)((c, _) => Pin(recenter(assign(sub, c), dsub)))
   }
 
   /** Encode the corpus: (vec_id, m, code) — m small integers per

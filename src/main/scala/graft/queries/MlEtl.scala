@@ -110,17 +110,13 @@ object MlEtl {
     // (bounds, candidate knots, per-knot moments, the fit) and a
     // DataFrame re-executes its whole plan per reference — four scans
     // of orders for an ≤O(100)-row series. Pin it as a driver-local
-    // relation (the IvfIndex.pin pattern for provably tiny frames):
+    // relation ([[graft.core.Pin]], for provably tiny frames):
     // ONE orders aggregate, then every stage reads local rows.
-    val monthly = {
-      val m = Tables.orders(s, d)
-        .groupBy(year(col("o_orderdate")).as("ano"), month(col("o_orderdate")).as("mes"))
-        .agg(sum(dec2(col("o_totalprice"))).as("total_dec"))
-        .withColumn("t", (col("ano") - 1995) * 12 + col("mes") - 1)
-        .withColumn("yc", (col("total_dec") * 100).cast("long"))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(m.collect().toSeq.asJava, m.schema)
-    }
+    val monthly = graft.core.Pin(Tables.orders(s, d)
+      .groupBy(year(col("o_orderdate")).as("ano"), month(col("o_orderdate")).as("mes"))
+      .agg(sum(dec2(col("o_totalprice"))).as("total_dec"))
+      .withColumn("t", (col("ano") - 1995) * 12 + col("mes") - 1)
+      .withColumn("yc", (col("total_dec") * 100).cast("long")))
     // The whole greedy changepoint selection runs ON THE DRIVER over
     // the pinned rows ([[knotScan]] — m1 v6): candidates, per-stage
     // moments, Cramer solves, SSE gates, residual updates. Every

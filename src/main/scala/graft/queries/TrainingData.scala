@@ -79,6 +79,13 @@ object TrainingData {
        UNION ALL SELECT doc_id + 1000000, text FROM documents
        UNION ALL SELECT doc_id + 2000000, text || ' extra' FROM documents)"""
 
+  /** The [[corpusSql]] sliver of the first 200 base docs and their
+    * copies, as a (doc_id, text) query body: the population of the
+    * pair-reference and CC-cluster oracles, whose recursive closure
+    * cost explodes past a few hundred docs. */
+  private[queries] def sliverCorpusSql: String =
+    s"SELECT doc_id, text FROM $corpusSql WHERE doc_id % 1000000 < 200"
+
   /** Every persisted store a first caller would otherwise build inside
     * a timed query. [[graft.Bench]] calls this from its UNTIMED warmup
     * so no timed pass conflates build cost with query cost (an
@@ -185,6 +192,65 @@ object TrainingData {
           lit(8)), " ").as("segtxt"))
       .withColumn("fp", md5(col("segtxt")))
 
+  /** [[boilerSegments]]'s tokens in DuckDB: `t(doc_id, toks)`, each
+    * doc behind its source's portal boilerplate. */
+  private[queries] def boilerToksCte: String = """t AS (SELECT doc_id,
+          regexp_split_to_array(trim('portal ' || source
+            || ' official mirror terms of service apply'
+            || ' all rights reserved contact webmaster ' || text),
+            '\s+') AS toks
+        FROM documents)"""
+
+  /** [[boilerToksCte]] and `b(doc_id, toks, g)`, one row per 8-token
+    * segment index g. */
+  private[queries] def boilerBlocksCtes: String = s"""$boilerToksCte,
+      b AS (SELECT doc_id, toks,
+          unnest(range(0, (len(toks) + 7) // 8)) AS g FROM t)"""
+
+  /** [[boilerSegments]] in DuckDB: [[boilerBlocksCtes]], the segment
+    * text `seg(doc_id, g, segtxt)` and `sf`, the same with
+    * `fp = md5(segtxt)`. */
+  private[queries] def boilerSegmentCtes: String = s"""$boilerBlocksCtes,
+      seg AS (SELECT doc_id, g,
+          array_to_string(list_slice(toks, g * 8 + 1, g * 8 + 8), ' ')
+            AS segtxt
+        FROM b),
+      sf AS (SELECT doc_id, g, segtxt, md5(segtxt) AS fp FROM seg)"""
+
+  /** The cleaned-text digest and token count of a `clean` column. */
+  private[queries] def cleanStatsSql: String = """md5(clean) AS clean_md5,
+        CASE WHEN length(clean) = 0 THEN CAST(0 AS BIGINT)
+          ELSE CAST(len(regexp_split_to_array(clean, '\s+')) AS BIGINT) END
+          AS clean_n_tok"""
+
+  /** [[graft.text.TextFunctions.qualityScore]] in DuckDB over a row's
+    * `text` and `toks`, rounded to 4 places. */
+  private[queries] def qualityRoundSql: String = """ROUND(
+          LEAST(len(toks) / 50.0, 1.0) * 0.4
+          + (1.0 - LEAST(CAST(length(text) - length(regexp_replace(text,
+                '[^A-Za-z0-9\s]', '', 'g')) AS DOUBLE)
+              / GREATEST(length(text), 1) * 5.0, 1.0)) * 0.3
+          + LEAST(CAST(len(list_filter(toks,
+                t -> t IN ('the', 'a', 'of', 'and'))) AS DOUBLE)
+              / GREATEST(len(toks), 1) * 10.0, 1.0) * 0.3, 4)"""
+
+  /** The same score over [[qualityRatiosSql]]'s columns. */
+  private[queries] def qualityMixSql: String = """ROUND(LEAST(n_tok / 50.0, 1.0) * 0.4
+            + (1.0 - LEAST(punct_ratio * 5.0, 1.0)) * 0.3
+            + LEAST(stop_ratio * 10.0, 1.0) * 0.3, 4)"""
+
+  /** `keys` and the score inputs `n_tok`, `punct_ratio` and
+    * `stop_ratio` of each row of `from`. */
+  private[queries] def qualityRatiosSql(keys: String, from: String): String =
+    s"""SELECT $keys, len(toks) AS n_tok,
+            CAST(length(text) - length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g'))
+              AS DOUBLE) / GREATEST(length(text), 1) AS punct_ratio,
+            CAST(len(list_filter(toks, t -> t IN ('the','a','of','and'))) AS DOUBLE)
+              / GREATEST(len(toks), 1) AS stop_ratio
+          FROM (SELECT $keys, text,
+                  regexp_split_to_array(trim(text), '\\s+') AS toks
+                FROM $from)"""
+
   /** Deterministic hash sub-shard in [0, n): the first 16 bits of
     * md5(doc_id), reproducible bit-for-bit in DuckDB as
     * `('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % n`.
@@ -249,6 +315,10 @@ object TrainingData {
       (if (v < 0) -r else r).toLong
     }
 
+  /** The keyword that marks an oracle CTE MATERIALIZED when `mat`
+    * (the inline-expansion guard for long chains), else nothing. */
+  private[queries] def matSql(mat: Boolean): String = if (mat) " MATERIALIZED" else ""
+
   /** The oracles' connected components over an undirected edge CTE
     * `p(id_a, id_b)`: `edges2`, both orientations, and the recursive
     * transitive closure `reach(a, b)` (the query needs WITH RECURSIVE;
@@ -260,6 +330,58 @@ object TrainingData {
         SELECT a, b FROM edges2
         UNION
         SELECT r.a, e.b FROM reach r JOIN edges2 e ON r.b = e.a)"""
+
+  /** The canonical label of `id` over [[reachCtes]]: the least id in
+    * its component, reading `m.mn` from [[reachMinJoinSql]]. */
+  private[queries] def reachMinSql(id: String): String =
+    s"LEAST($id, COALESCE(m.mn, $id))"
+
+  /** Joins `m(a, mn)`, each node's least reachable id, on `id`. */
+  private[queries] def reachMinJoinSql(id: String): String =
+    s"""LEFT JOIN (SELECT a, MIN(b) AS mn FROM reach GROUP BY a) m
+        ON $id = m.a"""
+
+  /** The oracles' power-iteration eigensolver ([[graft.ml.Opq]]'s
+    * eigensolve) for eigenpair `c` of the matrix CTE `src(m)`: `it<c>`
+    * runs 50 max-abs-normalized iterations from the all-ones vector,
+    * `uvec<c>` is the unit eigenvector and `lamt<c>` its Rayleigh
+    * eigenvalue. The query needs WITH RECURSIVE; no leading or
+    * trailing comma. */
+  private[queries] def powerIterCtes(c: String, src: String): String = s"""it$c(k, v) AS (
+        SELECT 0, list_transform(m[1], x -> CAST(1.0 AS DOUBLE)) FROM $src
+        UNION ALL
+        SELECT k + 1, list_transform(w, x ->
+            x / list_max(list_transform(w, y -> abs(y))))
+        FROM (SELECT k, list_transform(range(1, len(m) + 1), i ->
+            list_sum(list_transform(list_zip(m[i], v), p -> p[1] * p[2]))) AS w
+          FROM it$c, $src WHERE k < 50)),
+      uvec$c AS MATERIALIZED (SELECT list_transform(v, x ->
+          x / sqrt(list_sum(list_transform(v, y -> y * y)))) AS u
+        FROM it$c WHERE k = 50),
+      lamt$c AS MATERIALIZED (SELECT
+          list_sum(list_transform(list_zip(u, w), p -> p[1] * p[2])) AS lam
+        FROM (SELECT u, list_transform(range(1, len(m) + 1), i ->
+            list_sum(list_transform(list_zip(m[i], u), p -> p[1] * p[2]))) AS w
+          FROM uvec$c, $src))"""
+
+  /** `out(m)`: `src` with eigenpair `c` deflated away. */
+  private[queries] def deflateCte(out: String, src: String, c: String): String = s"""$out AS MATERIALIZED (
+        SELECT list_transform(range(1, len(m) + 1), i ->
+            list_transform(range(1, len(m) + 1), j ->
+              m[i][j] - lam * u[i] * u[j])) AS m
+        FROM $src, uvec$c, lamt$c)"""
+
+  /** The top `n` eigenpairs of `mat0(m)` by power iteration and
+    * deflation (mat0 → mat1 → …), each block led by a comma, then
+    * `lams(c, lam)` unioning the eigenvalues. */
+  private[queries] def eigenCtes(n: Int): String =
+    (0 until n).map(c => s""",
+      ${powerIterCtes(s"$c", s"mat$c")},
+      ${deflateCte(s"mat${c + 1}", s"mat$c", s"$c")}""").mkString +
+      (0 until n).map(c =>
+        s"SELECT $c AS c, (SELECT lam FROM lamt$c) AS lam FROM uvec$c")
+        .mkString(""",
+      lams AS MATERIALIZED (""", " UNION ALL ", ")")
 
   /** The rows of `docs` with a non-empty lower-cased token, plus
     * `cnt`, their 64 md5-bucket counts: x108's and x111's shared bucket

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Store, Tables}
+import graft.core.{Pin, Store, Tables}
 import graft.functions.VectorExpressions.cosineSim
 import graft.text.TextFunctions._
 import graft.queries.TrainingData._
@@ -486,7 +486,6 @@ object TrainingDataAnn {
     * the accumulators to decimal(38,0)), one int64→double conversion,
     * mirrored division order, integer-scale round at 1e-8. */
   val x46EmbedCovariance: Q = (s, d) => {
-    import scala.jdk.CollectionConverters._
     val n = Tables.embeddings(s, d).count()
     // d rows after a d-explode (not d²) pass — collect + re-create as
     // a local relation so the big pass below is the plan's only scan.
@@ -494,7 +493,7 @@ object TrainingDataAnn {
       .select(posexplode(col("embedding")).as(Seq("i", "xi")))
       .withColumn("qi", round(col("xi").cast("double") * 1e6, 0).cast("long"))
       .groupBy(col("i")).agg(sum(col("qi")).as("s_"))
-    val sums = s.createDataFrame(sumsDf.collect().toSeq.asJava, sumsDf.schema)
+    val sums = Pin(sumsDf)
     quantizedGram(Tables.embeddings(s, d))
       .join(broadcast(sums.select(col("i"), col("s_").as("s_i"))), "i")
       .join(broadcast(sums.select(col("i").as("j"), col("s_").as("s_j"))), "j")
@@ -545,7 +544,6 @@ object TrainingDataAnn {
     * is exactly 1 (√ of a perfect square); zero-variance dims yield
     * NULL via nullif. */
   val x48EmbedCorrelation: Q = (s, d) => {
-    import scala.jdk.CollectionConverters._
     val n = Tables.embeddings(s, d).count()
     val diagDf = Tables.embeddings(s, d)
       .select(posexplode(col("embedding")).as(Seq("i", "xi")))
@@ -553,7 +551,7 @@ object TrainingDataAnn {
       .groupBy(col("i"))
       .agg(sum(col("qi")).as("s_"), sum(col("qi") * col("qi")).as("p2"))
       .select(col("i"), col("s_"), (lit(n) * col("p2") - col("s_") * col("s_")).as("v_"))
-    val diag = s.createDataFrame(diagDf.collect().toSeq.asJava, diagDf.schema)
+    val diag = Pin(diagDf)
     quantizedGram(Tables.embeddings(s, d))
       .join(broadcast(diag.select(col("i"), col("s_").as("s_i"), col("v_").as("v_i"))), "i")
       .join(broadcast(diag.select(col("i").as("j"), col("s_").as("s_j"), col("v_").as("v_j"))), "j")
@@ -1251,11 +1249,7 @@ object TrainingDataAnn {
       .select(col("vec_id"), col("label"),
         posexplode(col("embedding")).as(Seq("i", "xi")))
       .withColumn("qi", round(col("xi").cast("double") * 1e6, 0).cast("long"))
-    val cent = {
-      val c = qq.groupBy(col("label"), col("i")).agg(sum(col("qi")).as("s_li"))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(c.collect().toSeq.asJava, c.schema)
-    }
+    val cent = Pin(qq.groupBy(col("label"), col("i")).agg(sum(col("qi")).as("s_li")))
     val cn = cent.groupBy(col("label"))
       .agg(sum(col("s_li").cast("decimal(38,0)") * col("s_li")).as("n2"))
       .select(col("label"), col("n2").cast("double").as("n2"))
@@ -1341,10 +1335,8 @@ object TrainingDataAnn {
       // balance report describes the index being served, not a fresh
       // retrain). The oracle's from-scratch Lloyd chain matching this
       // is exactly the persisted≡fresh identity x31 already pins.
-      val c = graft.ml.IvfIndex.loadCached(s, ensureIvfIndex(s, d)).cells
-        .groupBy(col("cell")).agg(count(lit(1)).as("n_vecs"))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(c.collect().toSeq.asJava, c.schema)
+      Pin(graft.ml.IvfIndex.loadCached(s, ensureIvfIndex(s, d)).cells
+        .groupBy(col("cell")).agg(count(lit(1)).as("n_vecs")))
     }
     counts
       .crossJoin(broadcast(counts.agg(sum(col("n_vecs")).as("total"),
@@ -1565,12 +1557,15 @@ object TrainingDataAnn {
 
   /** DuckDB mirror of the native CosineSimilarity expression —
     * list_sum accumulates left-to-right in double exactly like the
-    * codegen loop (proven by the x5/x12 hash matches). */
-  private def cosSql(a: String, b: String): String =
-    s"""(list_sum(list_transform(list_zip($a, $b),
+    * codegen loop (proven by the x5/x12 hash matches). [[cosSql]] is
+    * the same expression in parentheses. */
+  private def cosExpr(a: String, b: String): String =
+    s"""list_sum(list_transform(list_zip($a, $b),
           p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
         / (sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-         * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))))"""
+         * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))"""
+
+  private def cosSql(a: String, b: String): String = s"(${cosExpr(a, b)})"
 
   /** The IVF train+assign CTE chain (no leading WITH): cent0 seeds →
     * two deterministic Lloyd iterations (6dp-rounded argmax assign,
@@ -1585,19 +1580,28 @@ object TrainingDataAnn {
       ${ivfCentSql("assign1", "cent2")},
       ${ivfAssignSql("embeddings", "cent2", "assigned")}"""
 
+  /** Every `src` vector against every centroid of `cents`, ranked by
+    * 6dp-rounded cosine with cid tie-break: (vec_id, embedding, cid,
+    * rk), `where` ("" for none) filtering the pairs. */
+  private def cellRankSql(src: String, cents: String, where: String = ""): String = s"""
+          SELECT e.vec_id, e.embedding, c.cid,
+            ROW_NUMBER() OVER (PARTITION BY e.vec_id
+              ORDER BY ROUND(${cosSql("e.embedding", "c.ce")}, 6) DESC, c.cid)
+              AS rk
+          FROM $src e, $cents c$where"""
+
+  /** (vec_id, embedding, cell) for each `src` vector's cells of
+    * `cents` whose rank satisfies `keep` (`= 1`: the IVF assignment). */
+  private def nearestCellsSql(src: String, cents: String, keep: String): String = s"""
+        SELECT vec_id, embedding, cid AS cell FROM (${cellRankSql(src, cents)})
+        WHERE rk $keep"""
+
   /** One IVF Lloyd step as two CTEs: `out` assigns each `src` vector to
     * its 6dp-rounded argmax-cosine centroid of `cents`, and the
     * centroid step averages an assignment element-wise on integer sums
     * quantized back to float. */
   private def ivfAssignSql(src: String, cents: String, out: String): String = s"""
-      $out AS (
-        SELECT vec_id, embedding, cid AS cell FROM (
-          SELECT e.vec_id, e.embedding, c.cid,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id
-              ORDER BY ROUND(${cosSql("e.embedding", "c.ce")}, 6) DESC, c.cid)
-              AS rk
-          FROM $src e, $cents c)
-        WHERE rk = 1)"""
+      $out AS (${nearestCellsSql(src, cents, "= 1")})"""
 
   private def ivfCentSql(assign: String, out: String): String = s"""
       $out AS (
@@ -1626,7 +1630,7 @@ object TrainingDataAnn {
 
   private def pqAssignSql(sub: String, cents: String, out: String,
       mat: Boolean = false): String = s"""
-        $out AS${if (mat) " MATERIALIZED" else ""} (SELECT vec_id, m, cell, sub FROM (
+        $out AS${matSql(mat)} (SELECT vec_id, m, cell, sub FROM (
           SELECT s.vec_id, s.m, c.cid AS cell, s.sub,
             ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
               ORDER BY CAST(ROUND(${pqL2Sql("s.sub", "c.ce")} * 1e6, 0) AS BIGINT),
@@ -1635,7 +1639,7 @@ object TrainingDataAnn {
 
   private def pqCentSql(assigned: String, out: String,
       mat: Boolean = false): String = s"""
-        $out AS${if (mat) " MATERIALIZED" else ""} (SELECT m, cell AS cid,
+        $out AS${matSql(mat)} (SELECT m, cell AS cid,
           list(CAST(CAST(sv AS DOUBLE) / (CAST(n AS DOUBLE) * 16777216)
             AS FLOAT) ORDER BY pos) AS ce
         FROM (
@@ -1647,28 +1651,44 @@ object TrainingDataAnn {
           GROUP BY m, cell, i)
         GROUP BY m, cell)"""
 
+  /** The element-wise residual a − b in double, back to FLOAT. */
+  private def residualSql(a: String, b: String): String =
+    s"""list_transform(list_zip($a, $b),
+            p -> CAST(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) AS FLOAT))"""
+
+  /** The cosine top-10 tail over `scored(qid, nid, score)`: rank by
+    * score descending with nid tie-break, keep the first 10. */
+  private def top10Sql: String = """ranked AS (
+        SELECT qid, nid, score,
+          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rk
+        FROM scored)
+      SELECT qid, nid, score, CAST(rk AS INT) AS rk FROM ranked
+      WHERE rk <= 10 ORDER BY qid, rk"""
+
+  /** Brute-force cosine top-10 (x5/x34): every (q, n) pair `pred` keeps. */
+  private def bruteCosineOracle(pred: String): String = s"""
+      WITH scored AS (
+        SELECT q.vec_id AS qid, n.vec_id AS nid,
+          ROUND(
+            ${cosExpr("q.embedding", "n.embedding")},
+            4) AS score
+        FROM embeddings q, embeddings n
+        WHERE $pred),
+      $top10Sql"""
+
   private def ivfOracle(queryPred: String): String = {
     s"""
       WITH $ivfAssignedCtes,
       probes AS (
-        SELECT vec_id AS qid, embedding AS qe, cid AS cell FROM (
-          SELECT e.vec_id, e.embedding, c.cid,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id
-              ORDER BY ROUND(${cosSql("e.embedding", "c.ce")}, 6) DESC, c.cid)
-              AS rk
-          FROM embeddings e, cent2 c WHERE $queryPred)
+        SELECT vec_id AS qid, embedding AS qe, cid AS cell FROM (${
+          cellRankSql("embeddings", "cent2", s" WHERE $queryPred")})
         WHERE rk <= 4),
       scored AS (
         SELECT p.qid, a.vec_id AS nid,
           ROUND(${cosSql("p.qe", "a.embedding")}, 4) AS score
         FROM probes p
         JOIN assigned a ON a.cell = p.cell AND a.vec_id <> p.qid),
-      ranked AS (
-        SELECT qid, nid, score,
-          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rk
-        FROM scored)
-      SELECT qid, nid, score, CAST(rk AS INT) AS rk FROM ranked
-      WHERE rk <= 10 ORDER BY qid, rk"""
+      $top10Sql"""
   }
 
   /** Two PQ Lloyd iterations over `sub` from the seeds `c0<sfx>`: the
@@ -1682,61 +1702,130 @@ object TrainingDataAnn {
     pqCentSql(s"a1$sfx", s"c2$sfx", mat),
     pqAssignSql(sub, s"c2$sfx", out, mat)).mkString(",")
 
-  /** DuckDB mirror of the IVF-PQ store build ([[writeIvfPq]]) over the
-    * vectors of `from`: the coarse quantizer (`c0f` … `c2f`, assignment
-    * `af`), the residuals `res`/`rsub` and their PQ codebook (`c0` …
-    * `c2`, codes `codes`); no trailing comma. */
-  private def ivfPqStoreCtes(from: String): String =
+  /** `sub(vec_id, m, sub)`: the 8 width-8 sub-vectors of `vec` over `from`. */
+  private def pqSubCte(sub: String, vec: String, from: String,
+      mat: Boolean = false): String = s"""$sub AS${matSql(mat)} (SELECT vec_id, m,
+          list_slice($vec, m * 8 + 1, m * 8 + 8) AS sub
+        FROM $from, UNNEST(range(0, 8)) AS t(m))"""
+
+  /** A PQ codebook over `sub` ([[pqSubCte]]): the seeds `c0`, two Lloyd
+    * iterations (`c1`, `c2`) and the codes `codes`; no trailing comma. */
+  private def pqCodebookCtes(sub: String, vec: String, from: String,
+      mat: Boolean = false): String = s"""${pqSubCte(sub, vec, from, mat)},
+      c0 AS (SELECT m, CAST(vec_id AS INT) AS cid, sub AS ce
+        FROM $sub WHERE vec_id < 16),
+      ${pqLloydCtes(sub, "", "codes", mat)}"""
+
+  /** The IVF-PQ coarse quantizer over the vectors of `from`: the
+    * one-subspace rows `f`, seeds `c0f`, centroids `c1f`/`c2f` and the
+    * assignment `af`. */
+  private def pqCoarseCtes(from: String, af: String, mat: Boolean): String =
     s"""f AS (SELECT vec_id, 0 AS m, embedding AS sub FROM $from),
       c0f AS (SELECT m, CAST(vec_id AS INT) AS cid, sub AS ce
         FROM f WHERE vec_id < 16),
-      ${pqLloydCtes("f", "f", "af")},
-      res AS (SELECT a.vec_id, a.cell,
-          list_transform(list_zip(a.sub, c.ce),
-            p -> CAST(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) AS FLOAT))
+      ${pqLloydCtes("f", "f", af, mat)}"""
+
+  /** DuckDB mirror of the IVF-PQ store build ([[writeIvfPq]]) over the
+    * vectors of `from`: the coarse quantizer ([[pqCoarseCtes]], its
+    * assignment named `af`), the residuals `res`/`rsub` and their PQ
+    * codebook (`c0` … `c2`, codes `codes`); no trailing comma. */
+  private def ivfPqStoreCtes(from: String, af: String = "af",
+      mat: Boolean = false): String =
+    s"""${pqCoarseCtes(from, af, mat)},
+            ${residualCte("res", af, mat)},
+      ${pqCodebookCtes("rsub", "r", "res", mat)}"""
+
+  /** `name(vec_id, cell, r)`: each vector of the coarse assignment `af`
+    * minus its cell's `c2f` centroid. */
+  private def residualCte(name: String, af: String, mat: Boolean = false): String =
+    s"""$name AS${matSql(mat)} (SELECT a.vec_id, a.cell,
+          ${residualSql("a.sub", "c.ce")}
             AS r
-        FROM af a JOIN c2f c ON c.m = a.m AND c.cid = a.cell),
-      rsub AS (SELECT vec_id, m, list_slice(r, m * 8 + 1, m * 8 + 8) AS sub
-        FROM res, UNNEST(range(0, 8)) AS t(m)),
-      c0 AS (SELECT m, CAST(vec_id AS INT) AS cid, sub AS ce
-        FROM rsub WHERE vec_id < 16),
-      ${pqLloydCtes("rsub", "", "codes")}"""
+        FROM $af a JOIN c2f c ON c.m = a.m AND c.cid = a.cell)"""
+
+  /** The IVF-PQ probe → residual → ADC chain ([[ivfPqAdc]]) over
+    * [[ivfPqStoreCtes]]: queries vec_id < 5 of `src` probe their 4
+    * nearest coarse cells, and `adc(qid, nid, dist_q)` sums each
+    * sub-space's quantized L2 to the codes in those cells (coarse
+    * assignment `af`); no trailing comma. */
+  private def ivfPqAdcCtes(src: String, af: String): String = s"""probes AS (SELECT qid, cell, qce, qe FROM (
+          SELECT q.vec_id AS qid, c.cid AS cell, c.ce AS qce,
+            q.embedding AS qe,
+            ROW_NUMBER() OVER (PARTITION BY q.vec_id
+              ORDER BY CAST(ROUND(${pqL2Sql("q.embedding", "c.ce")} * 1e6, 0)
+                AS BIGINT), c.cid) AS rk
+          FROM $src q, c2f c WHERE q.vec_id < 5) WHERE rk <= 4),
+      qr AS (SELECT qid, cell,
+          ${residualSql("qe", "qce")}
+            AS qr
+        FROM probes),
+      qrs AS (SELECT qid, cell, m, list_slice(qr, m * 8 + 1, m * 8 + 8)
+            AS qsub
+        FROM qr, UNNEST(range(0, 8)) AS t(m)),
+      nce AS (SELECT k.vec_id AS nid, k.m, c.ce, a.cell
+        FROM codes k
+        JOIN c2 c ON c.m = k.m AND c.cid = k.cell
+        JOIN $af a ON a.vec_id = k.vec_id),
+      adc AS (SELECT s.qid, n.nid,
+          CAST(SUM(CAST(ROUND(${pqL2Sql("s.qsub", "n.ce")} * 1e6, 0)
+            AS BIGINT)) AS BIGINT) AS dist_q
+        FROM qrs s JOIN nce n ON n.cell = s.cell AND n.m = s.m
+        WHERE n.nid <> s.qid GROUP BY s.qid, n.nid)"""
+
+  /** The top-`k` tail over `from(qid, nid, dist_q)`: rank by dist_q
+    * ascending with nid tie-break as the CTE `name`. */
+  private def distTopSql(name: String, from: String, k: Int): String = s"""$name AS (SELECT qid, nid, dist_q,
+          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dist_q, nid) AS rk
+        FROM $from)
+      SELECT qid, nid, dist_q, CAST(rk AS INT) AS rk
+      FROM $name WHERE rk <= $k ORDER BY qid, rk"""
+
+  /** Recall@10 per query over `from(qid, rf, rq)`: the exact rank `rf`
+    * against the approximate rank `rq`. */
+  private def recallAt10Sql(from: String): String = s"""SELECT qid,
+        CAST(SUM(CASE WHEN rf <= 10 AND rq <= 10 THEN 1 ELSE 0 END)
+          AS BIGINT) AS n_match,
+        CAST(SUM(CASE WHEN rf <= 10 AND rq <= 10 THEN 1 ELSE 0 END)
+          AS DOUBLE) / 10 AS recall_at_10
+      FROM $from GROUP BY qid ORDER BY qid"""
+
+  /** The PQ recall audit ([[pqRecallAt10]]) over the vectors of `src`:
+    * a PQ codebook on its sub-vectors, ADC distances from the queries
+    * vec_id < 5, the exact squared L2 and recall@10 of one ranking
+    * against the other. */
+  private def pqRecallSql(src: String, mat: Boolean): String = s"""${pqCodebookCtes("sub", "embedding", src, mat)},
+      qs AS (SELECT vec_id AS qid, m, sub AS qsub FROM sub WHERE vec_id < 5),
+      nce AS (SELECT k.vec_id AS nid, k.m, c.ce
+        FROM codes k JOIN c2 c ON c.m = k.m AND c.cid = k.cell),
+      adc AS (
+        SELECT q.qid, n.nid,
+          CAST(SUM(CAST(ROUND(${pqL2Sql("q.qsub", "n.ce")} * 1e6, 0) AS BIGINT))
+            AS BIGINT) AS adc_q
+        FROM qs q JOIN nce n ON n.m = q.m
+        WHERE n.nid <> q.qid GROUP BY q.qid, n.nid),
+      ex AS (
+        SELECT q.vec_id AS qid, e.vec_id AS nid,
+          CAST(ROUND(${pqL2Sql("q.embedding", "e.embedding")} * 1e6, 0) AS BIGINT)
+            AS ex_q
+        FROM $src q, $src e
+        WHERE q.vec_id < 5 AND e.vec_id <> q.vec_id),
+      r AS (SELECT ex.qid, ex.nid,
+          ROW_NUMBER() OVER (PARTITION BY ex.qid
+            ORDER BY ex.ex_q, ex.nid) AS rf,
+          ROW_NUMBER() OVER (PARTITION BY ex.qid
+            ORDER BY adc.adc_q, ex.nid) AS rq
+        FROM ex JOIN adc USING (qid, nid))
+      ${recallAt10Sql("r")}"""
 
   /** The parametric-OPQ rotation as DuckDB CTEs, ending in
-    * `re(vec_id, embedding)` — the rotated corpus: x65's covariance
-    * CTEs (mat0) → 64 unrolled power-iteration + deflation blocks
-    * (bit-exact vs the [[graft.ml.Opq]] driver replica — prototype-
-    * verified over all 4160 values) → the eigenvalue-allocation
-    * recursion → the rotation. Shared by the x99b audit and x114's
-    * composed serving oracle; MATERIALIZED throughout keeps the
-    * chain linear. */
+    * `re(vec_id, embedding)` — the rotated corpus: the covariance CTEs
+    * (mat0, in HUGEINT where x65's are BIGINT) → 64 power-iteration +
+    * deflation blocks ([[eigenCtes]]; bit-exact vs the
+    * [[graft.ml.Opq]] driver replica — prototype-verified over all
+    * 4160 values) → the eigenvalue-allocation recursion → the
+    * rotation. Shared by the x99b audit and x114's composed serving
+    * oracle; MATERIALIZED throughout keeps the chain linear. */
   private def opqRotationCtes: String = {
-    val eig = new StringBuilder
-    for (c <- 0 until 64) eig ++= s""",
-      it$c(k, v) AS (
-        SELECT 0, list_transform(m[1], x -> CAST(1.0 AS DOUBLE)) FROM mat$c
-        UNION ALL
-        SELECT k + 1, list_transform(w, x ->
-            x / list_max(list_transform(w, y -> abs(y))))
-        FROM (SELECT k, list_transform(range(1, len(m) + 1), i ->
-            list_sum(list_transform(list_zip(m[i], v), p -> p[1] * p[2]))) AS w
-          FROM it$c, mat$c WHERE k < 50)),
-      uvec$c AS MATERIALIZED (SELECT list_transform(v, x ->
-          x / sqrt(list_sum(list_transform(v, y -> y * y)))) AS u
-        FROM it$c WHERE k = 50),
-      lamt$c AS MATERIALIZED (SELECT
-          list_sum(list_transform(list_zip(u, w), p -> p[1] * p[2])) AS lam
-        FROM (SELECT u, list_transform(range(1, len(m) + 1), i ->
-            list_sum(list_transform(list_zip(m[i], u), p -> p[1] * p[2]))) AS w
-          FROM uvec$c, mat$c)),
-      mat${c + 1} AS MATERIALIZED (
-        SELECT list_transform(range(1, len(m) + 1), i ->
-            list_transform(range(1, len(m) + 1), j ->
-              m[i][j] - lam * u[i] * u[j])) AS m
-        FROM mat$c, uvec$c, lamt$c)"""
-    val lamUnion = (0 until 64).map(c =>
-      s"SELECT $c AS c, (SELECT lam FROM lamt$c) AS lam FROM uvec$c")
-      .mkString(" UNION ALL ")
     val uUnion = (0 until 64).map(c => s"SELECT $c AS c, u FROM uvec$c")
       .mkString(" UNION ALL ")
     s"""WITH RECURSIVE $quantizedPairCtes,
@@ -1744,8 +1833,7 @@ object TrainingDataAnn {
           CAST(SUM(CAST(qi AS HUGEINT) * qj) AS HUGEINT) AS p,
           CAST(SUM(CASE WHEN j = i THEN qi END) AS BIGINT) AS s_diag
         FROM p2 GROUP BY i, j),
-      nn AS (SELECT COUNT(*) AS n FROM embeddings),
-      sums AS (SELECT i AS d_, s_diag AS s_ FROM cells WHERE j = i),
+      $covSumsCtes,
       covq AS (SELECT cells.i, cells.j,
           CAST((CASE WHEN CAST(nn.n AS HUGEINT) * p
               - CAST(si.s_ AS HUGEINT) * sj.s_ < 0 THEN -1 ELSE 1 END)
@@ -1754,16 +1842,9 @@ object TrainingDataAnn {
               + CAST(nn.n AS HUGEINT) * nn.n * 10000)
               // (2 * (CAST(nn.n AS HUGEINT) * nn.n * 10000)))
             AS DOUBLE) / 1e8 AS cov
-        FROM cells
-        JOIN sums si ON si.d_ = cells.i
-        JOIN sums sj ON sj.d_ = cells.j
-        CROSS JOIN nn),
-      full_m AS (SELECT i, j, cov FROM covq
-        UNION ALL SELECT j AS i, i AS j, cov FROM covq WHERE i < j),
-      rows_m AS (SELECT i, list(cov ORDER BY j) AS r FROM full_m GROUP BY i),
-      mat0 AS MATERIALIZED (SELECT list(r ORDER BY i) AS m FROM rows_m)
-      $eig,
-      lams AS MATERIALIZED ($lamUnion),
+        $covJoinSql),
+      ${covMatrixCtes("mat0")}
+      ${eigenCtes(64)},
       ulist AS MATERIALIZED ($uUnion),
       es AS MATERIALIZED (SELECT
         list(STRUCT_PACK(e := c, lam := lam) ORDER BY lam DESC, c) AS es
@@ -1800,22 +1881,76 @@ object TrainingDataAnn {
         FROM embeddings e CROSS JOIN rot GROUP BY e.vec_id)"""
   }
 
-  /** The covariance oracles' quantized pair rows: every vector's
-    * 1e-6-quantized components `qi`, paired with each component
-    * `qj` at j ≥ i, as the CTEs `d1`, `q1`, `d2` and `p2(i, j, qi, qj)`. */
-  private def quantizedPairCtes: String = """d1 AS (SELECT vec_id, embedding,
+  /** The covariance oracles' quantized components: every vector's
+    * components `xi` at 0-based position `i` (`d1`) and quantized to
+    * 1e-6 as `qi` (`q1`). */
+  private def quantizedCompCtes: String = """d1 AS (SELECT vec_id, embedding,
           unnest(range(0, len(embedding))) AS i,
           unnest(embedding) AS xi
         FROM embeddings),
       q1 AS (SELECT vec_id, embedding, i,
-          CAST(ROUND(CAST(xi AS DOUBLE) * 1e6, 0) AS BIGINT) AS qi FROM d1),
-      d2 AS (SELECT i, qi,
+          CAST(ROUND(CAST(xi AS DOUBLE) * 1e6, 0) AS BIGINT) AS qi FROM d1)"""
+
+  /** Each `q1` component paired with every component `qj` at j ≥ i, as
+    * the CTEs `d2` and `p2(i, j, qi, qj)`. */
+  private def compPairCtes: String = """d2 AS (SELECT i, qi,
           unnest(range(0, len(embedding))) AS j,
           unnest(embedding) AS xj
         FROM q1),
       p2 AS (SELECT i, j, qi,
           CAST(ROUND(CAST(xj AS DOUBLE) * 1e6, 0) AS BIGINT) AS qj
         FROM d2 WHERE j >= i)"""
+
+  /** The covariance oracles' quantized pair rows `d1`, `q1`, `d2` and
+    * `p2(i, j, qi, qj)`. */
+  private def quantizedPairCtes: String = s"$quantizedCompCtes,\n      $compPairCtes"
+
+  /** x46/x49/x65's exact-integer Gram cells `cells(i, j, p, s_diag)`
+    * over `p2`, the row count `nn` and the diagonal sums `sums`. */
+  private def covCellsCtes(mat: Boolean): String = s"""cells AS${matSql(mat)} (SELECT i, j, CAST(SUM(qi * qj) AS BIGINT) AS p,
+          CAST(SUM(CASE WHEN j = i THEN qi END) AS BIGINT) AS s_diag
+        FROM p2 GROUP BY i, j),
+      $covSumsCtes"""
+
+  private def covSumsCtes: String = """nn AS (SELECT COUNT(*) AS n FROM embeddings),
+      sums AS (SELECT i AS d_, s_diag AS s_ FROM cells WHERE j = i)"""
+
+  private def covJoinSql: String = """FROM cells
+        JOIN sums si ON si.d_ = cells.i
+        JOIN sums sj ON sj.d_ = cells.j
+        CROSS JOIN nn"""
+
+  /** The covariance (i ≤ j) in exact 1e-8 units from [[covCellsCtes]]. */
+  private def covSelectSql: String = s"""SELECT cells.i, cells.j,
+          CAST((CASE WHEN nn.n * p - si.s_ * sj.s_ < 0 THEN -1 ELSE 1 END)
+            * ((2 * abs(nn.n * p - si.s_ * sj.s_) + nn.n * nn.n * 10000)
+              // (2 * (nn.n * nn.n * 10000))) AS DOUBLE) / 1e8 AS cov
+        $covJoinSql"""
+
+  /** The full symmetric matrix of `covq(i, j, cov)` as the one-row
+    * CTE `out(m)`, a list of rows. */
+  private def covMatrixCtes(out: String): String = s"""full_m AS (SELECT i, j, cov FROM covq
+        UNION ALL SELECT j AS i, i AS j, cov FROM covq WHERE i < j),
+      rows_m AS (SELECT i, list(cov ORDER BY j) AS r FROM full_m GROUP BY i),
+      $out AS MATERIALIZED (SELECT list(r ORDER BY i) AS m FROM rows_m)"""
+
+  /** The semantic-dedup pair CTE `p(id_a, id_b)` ([[semdedupLabels]]):
+    * vectors of `src` sharing a cell with rounded cosine ≥ 0.4, then
+    * the transitive closure [[reachCtes]]; no trailing comma. */
+  private def cellPairsCtes(src: String, distinct: Boolean): String = s"""p AS (
+        SELECT${if (distinct) " DISTINCT" else ""} a.vec_id AS id_a, b.vec_id AS id_b
+        FROM $src a JOIN $src b
+          ON a.cell = b.cell AND a.vec_id < b.vec_id
+        WHERE ROUND(${cosSql("a.embedding", "b.embedding")}, 4) >= 0.4),
+      $reachCtes"""
+
+  /** Each vector's component minimum (`canonico`) over `reach`. */
+  private def semdedupSelectSql: String = s"""SELECT e.vec_id,
+        ${reachMinSql("e.vec_id")} AS canonico,
+        (e.vec_id = ${reachMinSql("e.vec_id")}) AS sobrevivente
+      FROM embeddings e
+      ${reachMinJoinSql("e.vec_id")}
+      ORDER BY e.vec_id"""
 
   val oracles: Map[String, String] = Map(
     "x146_kcenter_coreset" -> {
@@ -1931,14 +2066,8 @@ object TrainingDataAnn {
       fa AS (SELECT vec_id, 0 AS m, embedding AS sub FROM embeddings
         WHERE vec_id % 10 = 7),
       ${pqAssignSql("fa", "c2f", "aa")},
-      resa AS (SELECT a.vec_id, a.cell,
-          list_transform(list_zip(a.sub, c.ce),
-            p -> CAST(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) AS FLOAT))
-            AS r
-        FROM aa a JOIN c2f c ON c.m = a.m AND c.cid = a.cell),
-      rsuba AS (SELECT vec_id, m, list_slice(r, m * 8 + 1, m * 8 + 8)
-          AS sub
-        FROM resa, UNNEST(range(0, 8)) AS t(m)),
+            ${residualCte("resa", "aa")},
+      ${pqSubCte("rsuba", "r", "resa")},
       ${pqAssignSql("rsuba", "c2", "codesa")},
       tb AS (SELECT COUNT(*) AS tot_base FROM embeddings
         WHERE vec_id % 10 <> 7),
@@ -1961,84 +2090,11 @@ object TrainingDataAnn {
       CROSS JOIN tb CROSS JOIN ta
       ORDER BY m, code""",
     "x99b_opq_recall" -> s"""$opqRotationCtes,
-      sub AS MATERIALIZED (SELECT vec_id, m,
-          list_slice(embedding, m * 8 + 1, m * 8 + 8) AS sub
-        FROM re, UNNEST(range(0, 8)) AS t(m)),
-      c0 AS (SELECT m, CAST(vec_id AS INT) AS cid, sub AS ce
-        FROM sub WHERE vec_id < 16),
-      ${pqLloydCtes("sub", "", "codes", mat = true)},
-      qs AS (SELECT vec_id AS qid, m, sub AS qsub FROM sub WHERE vec_id < 5),
-      nce AS (SELECT k.vec_id AS nid, k.m, c.ce
-        FROM codes k JOIN c2 c ON c.m = k.m AND c.cid = k.cell),
-      adc AS (
-        SELECT q.qid, n.nid,
-          CAST(SUM(CAST(ROUND(${pqL2Sql("q.qsub", "n.ce")} * 1e6, 0) AS BIGINT))
-            AS BIGINT) AS adc_q
-        FROM qs q JOIN nce n ON n.m = q.m
-        WHERE n.nid <> q.qid GROUP BY q.qid, n.nid),
-      ex AS (
-        SELECT q.vec_id AS qid, e.vec_id AS nid,
-          CAST(ROUND(${pqL2Sql("q.embedding", "e.embedding")} * 1e6, 0) AS BIGINT)
-            AS ex_q
-        FROM re q, re e
-        WHERE q.vec_id < 5 AND e.vec_id <> q.vec_id),
-      r AS (SELECT ex.qid, ex.nid,
-          ROW_NUMBER() OVER (PARTITION BY ex.qid
-            ORDER BY ex.ex_q, ex.nid) AS rf,
-          ROW_NUMBER() OVER (PARTITION BY ex.qid
-            ORDER BY adc.adc_q, ex.nid) AS rq
-        FROM ex JOIN adc USING (qid, nid))
-      SELECT qid,
-        CAST(SUM(CASE WHEN rf <= 10 AND rq <= 10 THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_match,
-        CAST(SUM(CASE WHEN rf <= 10 AND rq <= 10 THEN 1 ELSE 0 END)
-          AS DOUBLE) / 10 AS recall_at_10
-      FROM r GROUP BY qid ORDER BY qid""",
+      ${pqRecallSql("re", mat = true)}""",
     "x114_opq_serve" -> s"""$opqRotationCtes,
-      f AS (SELECT vec_id, 0 AS m, embedding AS sub FROM re),
-      c0f AS (SELECT m, CAST(vec_id AS INT) AS cid, sub AS ce
-        FROM f WHERE vec_id < 16),
-      ${pqLloydCtes("f", "f", "aff", mat = true)},
-      res AS MATERIALIZED (SELECT a.vec_id, a.cell,
-          list_transform(list_zip(a.sub, c.ce),
-            p -> CAST(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) AS FLOAT))
-            AS r
-        FROM aff a JOIN c2f c ON c.m = a.m AND c.cid = a.cell),
-      rsub AS MATERIALIZED (SELECT vec_id, m,
-          list_slice(r, m * 8 + 1, m * 8 + 8) AS sub
-        FROM res, UNNEST(range(0, 8)) AS t(m)),
-      c0 AS (SELECT m, CAST(vec_id AS INT) AS cid, sub AS ce
-        FROM rsub WHERE vec_id < 16),
-      ${pqLloydCtes("rsub", "", "codes", mat = true)},
-      probes AS (SELECT qid, cell, qce, qe FROM (
-          SELECT q.vec_id AS qid, c.cid AS cell, c.ce AS qce,
-            q.embedding AS qe,
-            ROW_NUMBER() OVER (PARTITION BY q.vec_id
-              ORDER BY CAST(ROUND(${pqL2Sql("q.embedding", "c.ce")} * 1e6, 0)
-                AS BIGINT), c.cid) AS rk
-          FROM re q, c2f c WHERE q.vec_id < 5) WHERE rk <= 4),
-      qr AS (SELECT qid, cell,
-          list_transform(list_zip(qe, qce),
-            p -> CAST(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) AS FLOAT))
-            AS qr
-        FROM probes),
-      qrs AS (SELECT qid, cell, m, list_slice(qr, m * 8 + 1, m * 8 + 8)
-            AS qsub
-        FROM qr, UNNEST(range(0, 8)) AS t(m)),
-      nce AS (SELECT k.vec_id AS nid, k.m, c.ce, a.cell
-        FROM codes k
-        JOIN c2 c ON c.m = k.m AND c.cid = k.cell
-        JOIN aff a ON a.vec_id = k.vec_id),
-      adc AS (SELECT s.qid, n.nid,
-          CAST(SUM(CAST(ROUND(${pqL2Sql("s.qsub", "n.ce")} * 1e6, 0)
-            AS BIGINT)) AS BIGINT) AS dist_q
-        FROM qrs s JOIN nce n ON n.cell = s.cell AND n.m = s.m
-        WHERE n.nid <> s.qid GROUP BY s.qid, n.nid),
-      r AS (SELECT qid, nid, dist_q,
-          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dist_q, nid) AS rk
-        FROM adc)
-      SELECT qid, nid, dist_q, CAST(rk AS INT) AS rk
-      FROM r WHERE rk <= 10 ORDER BY qid, rk""",
+      ${ivfPqStoreCtes("re", "aff", mat = true)},
+      ${ivfPqAdcCtes("re", "aff")},
+      ${distTopSql("r", "adc", 10)}""",
     "x176_embed_drift" -> s"""
       WITH $ivfAssignedCtes,
       spl AS (SELECT (MAX(vec_id) + 1) // 2 AS sp FROM assigned),
@@ -2103,12 +2159,7 @@ object TrainingDataAnn {
           ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score_q DESC, nid)
             AS rq
         FROM sc)
-      SELECT qid,
-        CAST(SUM(CASE WHEN rf <= 10 AND rq <= 10 THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_match,
-        CAST(SUM(CASE WHEN rf <= 10 AND rq <= 10 THEN 1 ELSE 0 END)
-          AS DOUBLE) / 10 AS recall_at_10
-      FROM rk GROUP BY qid ORDER BY qid""",
+      ${recallAt10Sql("rk")}""",
     "x75_ivf_balance" -> s"""
       WITH $ivfAssignedCtes,
       counts AS (SELECT cell, COUNT(*) AS n_vecs FROM assigned
@@ -2230,20 +2281,12 @@ object TrainingDataAnn {
       GROUP BY label, i
       ORDER BY label, pos""",
     "x101_pq_health" -> s"""
-      WITH f AS (SELECT vec_id, 0 AS m, embedding AS sub FROM embeddings),
-      c0f AS (SELECT m, CAST(vec_id AS INT) AS cid, sub AS ce
-        FROM f WHERE vec_id < 16),
-      ${pqLloydCtes("f", "f", "af")},
+      WITH ${pqCoarseCtes("embeddings", "af", mat = false)},
       res AS (SELECT a.vec_id,
-          list_transform(list_zip(a.sub, c.ce),
-            p -> CAST(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) AS FLOAT))
+          ${residualSql("a.sub", "c.ce")}
             AS r
         FROM af a JOIN c2f c ON c.m = a.m AND c.cid = a.cell),
-      rsub AS (SELECT vec_id, m, list_slice(r, m * 8 + 1, m * 8 + 8) AS sub
-        FROM res, UNNEST(range(0, 8)) AS t(m)),
-      c0 AS (SELECT m, CAST(vec_id AS INT) AS cid, sub AS ce
-        FROM rsub WHERE vec_id < 16),
-      ${pqLloydCtes("rsub", "", "codes")},
+      ${pqCodebookCtes("rsub", "r", "res")},
       dist AS (SELECT k.vec_id, k.m, k.cell AS code,
           CAST(ROUND(${pqL2Sql("k.sub", "c.ce")} * 1e6, 0) AS BIGINT) AS dq
         FROM codes k JOIN c2 c ON c.m = k.m AND c.cid = k.cell),
@@ -2262,61 +2305,11 @@ object TrainingDataAnn {
       FROM agg ORDER BY m""",
     "x100_ivfpq_query" -> s"""
       WITH ${ivfPqStoreCtes("embeddings")},
-      probes AS (SELECT qid, cell, qce, qe FROM (
-          SELECT q.vec_id AS qid, c.cid AS cell, c.ce AS qce,
-            q.embedding AS qe,
-            ROW_NUMBER() OVER (PARTITION BY q.vec_id
-              ORDER BY CAST(ROUND(${pqL2Sql("q.embedding", "c.ce")} * 1e6, 0)
-                AS BIGINT), c.cid) AS rk
-          FROM embeddings q, c2f c WHERE q.vec_id < 5) WHERE rk <= 4),
-      qr AS (SELECT qid, cell,
-          list_transform(list_zip(qe, qce),
-            p -> CAST(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) AS FLOAT))
-            AS qr
-        FROM probes),
-      qrs AS (SELECT qid, cell, m, list_slice(qr, m * 8 + 1, m * 8 + 8)
-            AS qsub
-        FROM qr, UNNEST(range(0, 8)) AS t(m)),
-      nce AS (SELECT k.vec_id AS nid, k.m, c.ce, a.cell
-        FROM codes k
-        JOIN c2 c ON c.m = k.m AND c.cid = k.cell
-        JOIN af a ON a.vec_id = k.vec_id),
-      adc AS (SELECT s.qid, n.nid,
-          CAST(SUM(CAST(ROUND(${pqL2Sql("s.qsub", "n.ce")} * 1e6, 0)
-            AS BIGINT)) AS BIGINT) AS dist_q
-        FROM qrs s JOIN nce n ON n.cell = s.cell AND n.m = s.m
-        WHERE n.nid <> s.qid GROUP BY s.qid, n.nid),
-      r AS (SELECT qid, nid, dist_q,
-          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dist_q, nid) AS rk
-        FROM adc)
-      SELECT qid, nid, dist_q, CAST(rk AS INT) AS rk
-      FROM r WHERE rk <= 10 ORDER BY qid, rk""",
+      ${ivfPqAdcCtes("embeddings", "af")},
+      ${distTopSql("r", "adc", 10)}""",
     "x129_adc_rerank" -> s"""
       WITH ${ivfPqStoreCtes("embeddings")},
-      probes AS (SELECT qid, cell, qce, qe FROM (
-          SELECT q.vec_id AS qid, c.cid AS cell, c.ce AS qce,
-            q.embedding AS qe,
-            ROW_NUMBER() OVER (PARTITION BY q.vec_id
-              ORDER BY CAST(ROUND(${pqL2Sql("q.embedding", "c.ce")} * 1e6, 0)
-                AS BIGINT), c.cid) AS rk
-          FROM embeddings q, c2f c WHERE q.vec_id < 5) WHERE rk <= 4),
-      qr AS (SELECT qid, cell,
-          list_transform(list_zip(qe, qce),
-            p -> CAST(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) AS FLOAT))
-            AS qr
-        FROM probes),
-      qrs AS (SELECT qid, cell, m, list_slice(qr, m * 8 + 1, m * 8 + 8)
-            AS qsub
-        FROM qr, UNNEST(range(0, 8)) AS t(m)),
-      nce AS (SELECT k.vec_id AS nid, k.m, c.ce, a.cell
-        FROM codes k
-        JOIN c2 c ON c.m = k.m AND c.cid = k.cell
-        JOIN af a ON a.vec_id = k.vec_id),
-      adc AS (SELECT s.qid, n.nid,
-          CAST(SUM(CAST(ROUND(${pqL2Sql("s.qsub", "n.ce")} * 1e6, 0)
-            AS BIGINT)) AS BIGINT) AS dist_q
-        FROM qrs s JOIN nce n ON n.cell = s.cell AND n.m = s.m
-        WHERE n.nid <> s.qid GROUP BY s.qid, n.nid),
+      ${ivfPqAdcCtes("embeddings", "af")},
       short AS (SELECT qid, nid FROM (
           SELECT qid, nid,
             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dist_q, nid) AS ark
@@ -2327,48 +2320,9 @@ object TrainingDataAnn {
         FROM short s
         JOIN embeddings q ON q.vec_id = s.qid
         JOIN embeddings n ON n.vec_id = s.nid),
-      rr AS (SELECT qid, nid, dist_q,
-          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dist_q, nid) AS rk
-        FROM ex)
-      SELECT qid, nid, dist_q, CAST(rk AS INT) AS rk
-      FROM rr WHERE rk <= 4 ORDER BY qid, rk""",
-    "x99_pq_recall" -> {
-      def l2 = pqL2Sql _
-      s"""
-      WITH sub AS (
-        SELECT vec_id, m, list_slice(embedding, m * 8 + 1, m * 8 + 8) AS sub
-        FROM embeddings, UNNEST(range(0, 8)) AS t(m)),
-      c0 AS (SELECT m, CAST(vec_id AS INT) AS cid, sub AS ce
-        FROM sub WHERE vec_id < 16),
-      ${pqLloydCtes("sub", "", "codes")},
-      qs AS (SELECT vec_id AS qid, m, sub AS qsub FROM sub WHERE vec_id < 5),
-      nce AS (SELECT k.vec_id AS nid, k.m, c.ce
-        FROM codes k JOIN c2 c ON c.m = k.m AND c.cid = k.cell),
-      adc AS (
-        SELECT q.qid, n.nid,
-          CAST(SUM(CAST(ROUND(${l2("q.qsub", "n.ce")} * 1e6, 0) AS BIGINT))
-            AS BIGINT) AS adc_q
-        FROM qs q JOIN nce n ON n.m = q.m
-        WHERE n.nid <> q.qid GROUP BY q.qid, n.nid),
-      ex AS (
-        SELECT q.vec_id AS qid, e.vec_id AS nid,
-          CAST(ROUND(${l2("q.embedding", "e.embedding")} * 1e6, 0) AS BIGINT)
-            AS ex_q
-        FROM embeddings q, embeddings e
-        WHERE q.vec_id < 5 AND e.vec_id <> q.vec_id),
-      r AS (SELECT ex.qid, ex.nid,
-          ROW_NUMBER() OVER (PARTITION BY ex.qid
-            ORDER BY ex.ex_q, ex.nid) AS rf,
-          ROW_NUMBER() OVER (PARTITION BY ex.qid
-            ORDER BY adc.adc_q, ex.nid) AS rq
-        FROM ex JOIN adc USING (qid, nid))
-      SELECT qid,
-        CAST(SUM(CASE WHEN rf <= 10 AND rq <= 10 THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_match,
-        CAST(SUM(CASE WHEN rf <= 10 AND rq <= 10 THEN 1 ELSE 0 END)
-          AS DOUBLE) / 10 AS recall_at_10
-      FROM r GROUP BY qid ORDER BY qid"""
-    },
+      ${distTopSql("rr", "ex", 4)}""",
+    "x99_pq_recall" -> s"""
+      WITH ${pqRecallSql("embeddings", mat = false)}""",
     "x51_embed_standardize" -> """
       WITH d1 AS (SELECT vec_id,
           unnest(range(0, len(embedding))) AS i,
@@ -2388,66 +2342,13 @@ object TrainingDataAnn {
       ORDER BY q1.vec_id, q1.i""",
     "x65_embed_whiten" -> s"""
       WITH RECURSIVE $quantizedPairCtes,
-      cells AS MATERIALIZED (SELECT i, j, CAST(SUM(qi * qj) AS BIGINT) AS p,
-          CAST(SUM(CASE WHEN j = i THEN qi END) AS BIGINT) AS s_diag
-        FROM p2 GROUP BY i, j),
-      nn AS (SELECT COUNT(*) AS n FROM embeddings),
-      sums AS (SELECT i AS d_, s_diag AS s_ FROM cells WHERE j = i),
-      covq AS (SELECT cells.i, cells.j,
-          CAST((CASE WHEN nn.n * p - si.s_ * sj.s_ < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(nn.n * p - si.s_ * sj.s_) + nn.n * nn.n * 10000)
-              // (2 * (nn.n * nn.n * 10000))) AS DOUBLE) / 1e8 AS cov
-        FROM cells
-        JOIN sums si ON si.d_ = cells.i
-        JOIN sums sj ON sj.d_ = cells.j
-        CROSS JOIN nn),
-      full_m AS (SELECT i, j, cov FROM covq
-        UNION ALL SELECT j AS i, i AS j, cov FROM covq WHERE i < j),
-      rows_m AS (SELECT i, list(cov ORDER BY j) AS r FROM full_m GROUP BY i),
-      mat AS MATERIALIZED (SELECT list(r ORDER BY i) AS m FROM rows_m),
+      ${covCellsCtes(mat = true)},
+      covq AS ($covSelectSql),
+      ${covMatrixCtes("mat")},
       svt AS MATERIALIZED (SELECT list(s_ ORDER BY d_) AS sv FROM sums),
-      it1(k, v) AS (
-        SELECT 0, list_transform(m[1], x -> CAST(1.0 AS DOUBLE)) FROM mat
-        UNION ALL
-        SELECT k + 1,
-          list_transform(w, x ->
-            x / list_max(list_transform(w, y -> abs(y))))
-        FROM (SELECT k,
-            list_transform(range(1, len(m) + 1), i ->
-              list_sum(list_transform(list_zip(m[i], v), p -> p[1] * p[2]))) AS w
-          FROM it1, mat WHERE k < 50)),
-      uvec1 AS MATERIALIZED (SELECT list_transform(v, x ->
-          x / sqrt(list_sum(list_transform(v, y -> y * y)))) AS u
-        FROM it1 WHERE k = 50),
-      lamt1 AS MATERIALIZED (SELECT
-          list_sum(list_transform(list_zip(u, w), p -> p[1] * p[2])) AS lam
-        FROM (SELECT u,
-            list_transform(range(1, len(m) + 1), i ->
-              list_sum(list_transform(list_zip(m[i], u), p -> p[1] * p[2]))) AS w
-          FROM uvec1, mat)),
-      mat2 AS MATERIALIZED (SELECT list_transform(range(1, len(m) + 1), i ->
-            list_transform(range(1, len(m) + 1), j ->
-              m[i][j] - lam * u[i] * u[j])) AS m
-        FROM mat, uvec1, lamt1),
-      it2(k, v) AS (
-        SELECT 0, list_transform(m[1], x -> CAST(1.0 AS DOUBLE)) FROM mat2
-        UNION ALL
-        SELECT k + 1,
-          list_transform(w, x ->
-            x / list_max(list_transform(w, y -> abs(y))))
-        FROM (SELECT k,
-            list_transform(range(1, len(m) + 1), i ->
-              list_sum(list_transform(list_zip(m[i], v), p -> p[1] * p[2]))) AS w
-          FROM it2, mat2 WHERE k < 50)),
-      uvec2 AS MATERIALIZED (SELECT list_transform(v, x ->
-          x / sqrt(list_sum(list_transform(v, y -> y * y)))) AS u
-        FROM it2 WHERE k = 50),
-      lamt2 AS MATERIALIZED (SELECT
-          list_sum(list_transform(list_zip(u, w), p -> p[1] * p[2])) AS lam
-        FROM (SELECT u,
-            list_transform(range(1, len(m) + 1), i ->
-              list_sum(list_transform(list_zip(m[i], u), p -> p[1] * p[2]))) AS w
-          FROM uvec2, mat2)),
+      ${powerIterCtes("1", "mat")},
+      ${deflateCte("mat2", "mat", "1")},
+      ${powerIterCtes("2", "mat2")},
       md AS MATERIALIZED (SELECT
           list_sum(list_transform(list_zip(svt.sv, uvec1.u),
             p -> CAST(p[1] AS DOUBLE) * p[2])) / (CAST(nn.n AS DOUBLE) * 1e6) AS md1,
@@ -2467,23 +2368,9 @@ object TrainingDataAnn {
       ORDER BY e.vec_id""",
     "x49_pca_project" -> s"""
       WITH RECURSIVE $quantizedPairCtes,
-      cells AS (SELECT i, j, CAST(SUM(qi * qj) AS BIGINT) AS p,
-          CAST(SUM(CASE WHEN j = i THEN qi END) AS BIGINT) AS s_diag
-        FROM p2 GROUP BY i, j),
-      nn AS (SELECT COUNT(*) AS n FROM embeddings),
-      sums AS (SELECT i AS d_, s_diag AS s_ FROM cells WHERE j = i),
-      covq AS (SELECT cells.i, cells.j,
-          CAST((CASE WHEN nn.n * p - si.s_ * sj.s_ < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(nn.n * p - si.s_ * sj.s_) + nn.n * nn.n * 10000)
-              // (2 * (nn.n * nn.n * 10000))) AS DOUBLE) / 1e8 AS cov
-        FROM cells
-        JOIN sums si ON si.d_ = cells.i
-        JOIN sums sj ON sj.d_ = cells.j
-        CROSS JOIN nn),
-      full_m AS (SELECT i, j, cov FROM covq
-        UNION ALL SELECT j AS i, i AS j, cov FROM covq WHERE i < j),
-      rows_m AS (SELECT i, list(cov ORDER BY j) AS r FROM full_m GROUP BY i),
-      mat AS MATERIALIZED (SELECT list(r ORDER BY i) AS m FROM rows_m),
+      ${covCellsCtes(mat = false)},
+      covq AS ($covSelectSql),
+      ${covMatrixCtes("mat")},
       it(k, v) AS (
         -- CAST: a bare 1.0 literal is DECIMAL in DuckDB and would
         -- run the whole iteration in decimal arithmetic
@@ -2504,25 +2391,14 @@ object TrainingDataAnn {
           p -> CAST(p[1] AS DOUBLE) * p[2])), 6) AS pc1_score
       FROM embeddings e, uvec u
       ORDER BY e.vec_id""",
-    "x48_embed_correlation" -> """
-      WITH d1 AS (SELECT vec_id, embedding,
-          unnest(range(0, len(embedding))) AS i,
-          unnest(embedding) AS xi
-        FROM embeddings),
-      q1 AS (SELECT vec_id, embedding, i,
-          CAST(ROUND(CAST(xi AS DOUBLE) * 1e6, 0) AS BIGINT) AS qi FROM d1),
+    "x48_embed_correlation" -> s"""
+      WITH $quantizedCompCtes,
       nn AS (SELECT COUNT(*) AS n FROM embeddings),
       diag AS (SELECT i, CAST(SUM(qi) AS BIGINT) AS s_,
           nn.n * CAST(SUM(qi * qi) AS BIGINT)
             - CAST(SUM(qi) AS BIGINT) * CAST(SUM(qi) AS BIGINT) AS v_
         FROM q1 CROSS JOIN nn GROUP BY i, nn.n),
-      d2 AS (SELECT i, qi,
-          unnest(range(0, len(embedding))) AS j,
-          unnest(embedding) AS xj
-        FROM q1),
-      p2 AS (SELECT i, j, qi,
-          CAST(ROUND(CAST(xj AS DOUBLE) * 1e6, 0) AS BIGINT) AS qj
-        FROM d2 WHERE j >= i),
+      $compPairCtes,
       cells AS (SELECT i, j, CAST(SUM(qi * qj) AS BIGINT) AS p
         FROM p2 GROUP BY i, j)
       SELECT cells.i, cells.j,
@@ -2561,19 +2437,8 @@ object TrainingDataAnn {
     },
     "x46_embed_covariance" -> s"""
       WITH $quantizedPairCtes,
-      cells AS (SELECT i, j, CAST(SUM(qi * qj) AS BIGINT) AS p,
-          CAST(SUM(CASE WHEN j = i THEN qi END) AS BIGINT) AS s_diag
-        FROM p2 GROUP BY i, j),
-      nn AS (SELECT COUNT(*) AS n FROM embeddings),
-      sums AS (SELECT i AS d_, s_diag AS s_ FROM cells WHERE j = i)
-      SELECT cells.i, cells.j,
-        CAST((CASE WHEN nn.n * p - si.s_ * sj.s_ < 0 THEN -1 ELSE 1 END)
-          * ((2 * abs(nn.n * p - si.s_ * sj.s_) + nn.n * nn.n * 10000)
-            // (2 * (nn.n * nn.n * 10000))) AS DOUBLE) / 1e8 AS cov
-      FROM cells
-      JOIN sums si ON si.d_ = cells.i
-      JOIN sums sj ON sj.d_ = cells.j
-      CROSS JOIN nn
+      ${covCellsCtes(mat = false)}
+      $covSelectSql
       ORDER BY cells.i, cells.j""",
     "x45_cluster_diversity" -> """
       WITH q AS (
@@ -2642,29 +2507,18 @@ object TrainingDataAnn {
         FROM cand c
         JOIN embeddings qe ON qe.vec_id = c.qid
         JOIN embeddings ne ON ne.vec_id = c.nid),
-      ranked AS (
-        SELECT qid, nid, score,
-          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rk
-        FROM scored)
-      SELECT qid, nid, score, CAST(rk AS INT) AS rk FROM ranked
-      WHERE rk <= 10 ORDER BY qid, rk""",
+      $top10Sql""",
     "x13_ann_ivf" -> ivfOracle("e.vec_id < 5"),
     "x31_ivf_query" -> ivfOracle("e.vec_id >= 5 AND e.vec_id < 10"),
-    "x12_dedup_cosine" -> """
+    "x12_dedup_cosine" -> s"""
       SELECT a.vec_id AS id_a, b.vec_id AS id_b,
         ROUND(
-          list_sum(list_transform(list_zip(a.embedding, b.embedding),
-            p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-          / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-           * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
+          ${cosExpr("a.embedding", "b.embedding")},
           4) AS cos
       FROM embeddings a, embeddings b
       WHERE a.vec_id < b.vec_id
         AND ROUND(
-          list_sum(list_transform(list_zip(a.embedding, b.embedding),
-            p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-          / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-           * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
+          ${cosExpr("a.embedding", "b.embedding")},
           4) >= 0.4
       ORDER BY id_a, id_b""",
     "x119_semantic_leakage" -> s"""
@@ -2693,32 +2547,15 @@ object TrainingDataAnn {
       FROM tot t LEFT JOIN lk USING (split) ORDER BY split""",
     "x35_semantic_dedup" -> s"""
       WITH RECURSIVE $ivfAssignedCtes,
-      p AS (
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        FROM assigned a JOIN assigned b
-          ON a.cell = b.cell AND a.vec_id < b.vec_id
-        WHERE ROUND(${cosSql("a.embedding", "b.embedding")}, 4) >= 0.4),
-      $reachCtes
-      SELECT e.vec_id,
-        LEAST(e.vec_id, COALESCE(m.mn, e.vec_id)) AS canonico,
-        (e.vec_id = LEAST(e.vec_id, COALESCE(m.mn, e.vec_id))) AS sobrevivente
-      FROM embeddings e
-      LEFT JOIN (SELECT a, MIN(b) AS mn FROM reach GROUP BY a) m
-        ON e.vec_id = m.a
-      ORDER BY e.vec_id""",
+      ${cellPairsCtes("assigned", distinct = false)}
+      $semdedupSelectSql""",
     "x120_hard_negatives" -> s"""
       WITH RECURSIVE $ivfAssignedCtes,
-      p AS (
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        FROM assigned a JOIN assigned b
-          ON a.cell = b.cell AND a.vec_id < b.vec_id
-        WHERE ROUND(${cosSql("a.embedding", "b.embedding")}, 4) >= 0.4),
-      $reachCtes,
+      ${cellPairsCtes("assigned", distinct = false)},
       lab AS (
-        SELECT e.vec_id, LEAST(e.vec_id, COALESCE(m.mn, e.vec_id)) AS label
+        SELECT e.vec_id, ${reachMinSql("e.vec_id")} AS label
         FROM embeddings e
-        LEFT JOIN (SELECT a, MIN(b) AS mn FROM reach GROUP BY a) m
-          ON e.vec_id = m.a),
+        ${reachMinJoinSql("e.vec_id")}),
       av AS (
         SELECT a.vec_id, a.cell, a.embedding, l.label
         FROM assigned a JOIN lab l USING (vec_id)),
@@ -2734,59 +2571,10 @@ object TrainingDataAnn {
       FROM rk WHERE rk <= 3 ORDER BY anchor, rk""",
     "x35b_semdedup_nprobe2" -> s"""
       WITH RECURSIVE $ivfAssignedCtes,
-      probed AS (
-        SELECT vec_id, embedding, cid AS cell FROM (
-          SELECT e.vec_id, e.embedding, c.cid,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id
-              ORDER BY ROUND(${cosSql("e.embedding", "c.ce")}, 6) DESC, c.cid)
-              AS rk
-          FROM embeddings e, cent2 c)
-        WHERE rk <= 2),
-      p AS (
-        SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-        FROM probed a JOIN probed b
-          ON a.cell = b.cell AND a.vec_id < b.vec_id
-        WHERE ROUND(${cosSql("a.embedding", "b.embedding")}, 4) >= 0.4),
-      $reachCtes
-      SELECT e.vec_id,
-        LEAST(e.vec_id, COALESCE(m.mn, e.vec_id)) AS canonico,
-        (e.vec_id = LEAST(e.vec_id, COALESCE(m.mn, e.vec_id))) AS sobrevivente
-      FROM embeddings e
-      LEFT JOIN (SELECT a, MIN(b) AS mn FROM reach GROUP BY a) m
-        ON e.vec_id = m.a
-      ORDER BY e.vec_id""",
-    "x34_filtered_ann" -> """
-      WITH scored AS (
-        SELECT q.vec_id AS qid, n.vec_id AS nid,
-          ROUND(
-            list_sum(list_transform(list_zip(q.embedding, n.embedding),
-              p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-            / (sqrt(list_sum(list_transform(q.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-             * sqrt(list_sum(list_transform(n.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-            4) AS score
-        FROM embeddings q, embeddings n
-        WHERE q.vec_id < 5 AND n.label = 0 AND n.vec_id <> q.vec_id),
-      ranked AS (
-        SELECT qid, nid, score,
-          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rk
-        FROM scored)
-      SELECT qid, nid, score, CAST(rk AS INT) AS rk FROM ranked
-      WHERE rk <= 10 ORDER BY qid, rk""",
-    "x5_ann_cosine" -> """
-      WITH scored AS (
-        SELECT q.vec_id AS qid, n.vec_id AS nid,
-          ROUND(
-            list_sum(list_transform(list_zip(q.embedding, n.embedding),
-              p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-            / (sqrt(list_sum(list_transform(q.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-             * sqrt(list_sum(list_transform(n.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-            4) AS score
-        FROM embeddings q, embeddings n
-        WHERE q.vec_id < 5 AND n.vec_id <> q.vec_id),
-      ranked AS (
-        SELECT qid, nid, score,
-          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rk
-        FROM scored)
-      SELECT qid, nid, score, CAST(rk AS INT) AS rk FROM ranked
-      WHERE rk <= 10 ORDER BY qid, rk""")
+      probed AS (${nearestCellsSql("embeddings", "cent2", "<= 2")}),
+      ${cellPairsCtes("probed", distinct = true)}
+      $semdedupSelectSql""",
+    "x34_filtered_ann" ->
+      bruteCosineOracle("q.vec_id < 5 AND n.label = 0 AND n.vec_id <> q.vec_id"),
+    "x5_ann_cosine" -> bruteCosineOracle("q.vec_id < 5 AND n.vec_id <> q.vec_id"))
 }

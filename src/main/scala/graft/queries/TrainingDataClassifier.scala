@@ -1156,10 +1156,7 @@ object TrainingDataClassifier {
     * CTE with a leading comma. */
   private def clfGdStepsCtes: String =
     (1 to 20).map(k => s""",
-      z$k AS MATERIALIZED (SELECT doc_id, y,
-          CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
-            AS BIGINT) AS zq
-        FROM tf, w${k - 1} GROUP BY doc_id, y),
+      ${clfLogitCte(s"z$k", w = s"w${k - 1}", mat = true)},
       g$k AS MATERIALIZED (SELECT t.bucket,
           CAST(SUM(CAST(ROUND((CAST(CAST(ROUND((1 / (1
             + exp(-(CAST(z.zq AS DOUBLE) / 1e9)))) * 1e6, 0) AS BIGINT)
@@ -1230,17 +1227,54 @@ object TrainingDataClassifier {
         b -> CAST(0.0 AS DOUBLE)) AS w)
       $clfGdStepsCtes"""
 
-  /** [[clfTrainedSql]]'s trained model applied to its own features:
-    * the CTEs `zs` (doc logits, 1e-9 units) and `ps(doc_id, y, pq)` (the
-    * 1e-6-quantized sigmoid), no leading or trailing comma. */
-  private def clfScoredCtes: String = s"""zs AS (SELECT doc_id, y,
+  /** `name(doc_id, y, zq)`: each doc's logit in 1e-9 units under the
+    * weights `w` over the features `from` ([[clfLogits]]). */
+  private def clfLogitCte(name: String, from: String = "tf", w: String = "w20",
+      mat: Boolean = false): String =
+    s"""$name AS${matSql(mat)} (SELECT doc_id, y,
           CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
             AS BIGINT) AS zq
-        FROM tf, w20 GROUP BY doc_id, y),
-      ps AS (SELECT doc_id, y,
-          CAST(ROUND((1 / (1 + exp(-(CAST(zq AS DOUBLE) / 1e9)))) * 1e6, 0)
-            AS BIGINT) AS pq
-        FROM zs)"""
+        FROM $from, $w GROUP BY doc_id, y)"""
+
+  /** The sigmoid of a row's logit `zq`, quantized to 1e-6. */
+  private def clfProbSql: String =
+    """CAST(ROUND((1 / (1 + exp(-(CAST(zq AS DOUBLE) / 1e9)))) * 1e6, 0)
+            AS BIGINT)"""
+
+  /** [[clfTrainedSql]]'s trained model applied to the features `from`:
+    * the CTEs `z` (doc logits, [[clfLogitCte]]) and `p(<keys>, pq)`
+    * (the 1e-6-quantized sigmoid), no leading or trailing comma. */
+  private def clfScoredCtes(keys: String = "doc_id, y", from: String = "tf",
+      z: String = "zs", p: String = "ps"): String = s"""${clfLogitCte(z, from)},
+      $p AS (SELECT $keys,
+          $clfProbSql AS pq
+        FROM $z)"""
+
+  /** Each trajectory logit of [[clfTrajCtes]] as `pq`. */
+  private def trajProbSql(keys: String): String = s"""SELECT $keys,
+            $clfProbSql AS pq
+          FROM trajz"""
+
+  /** The reliability-diagram columns of a per-bin `(bin, n_docs, spq,
+    * sy)` relation: mean prediction, positive rate and their gap. */
+  private def calibrationCols: String = """SELECT bin, n_docs,
+        CAST(((2 * spq + n_docs) // (2 * n_docs)) AS DOUBLE) / 1e6
+          AS mean_pred,
+        CAST(((2 * sy * 1000000 + n_docs) // (2 * n_docs)) AS DOUBLE) / 1e6
+          AS pos_rate,
+        CAST(ABS(((2 * spq + n_docs) // (2 * n_docs))
+          - ((2 * sy * 1000000 + n_docs) // (2 * n_docs))) AS DOUBLE) / 1e6
+          AS gap"""
+
+  /** The quantile cut over `sc`'s column `v`: its histogram `h`, total
+    * `tt`, cumulative counts `c` and `cut(<name>)`, the least value
+    * whose cumulative count satisfies `cond`. */
+  private def cutCtes(v: String, name: String, cond: String): String =
+    s"""h AS (SELECT $v, CAST(COUNT(*) AS BIGINT) AS cnt FROM sc GROUP BY $v),
+      tt AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n FROM h),
+      c AS (SELECT $v, CAST(SUM(cnt) OVER (ORDER BY $v) AS BIGINT) AS cum
+        FROM h),
+      cut AS (SELECT MIN($v) AS $name FROM c, tt WHERE $cond)"""
 
   /** [[clfTrainedSql]]'s training trajectory: `zf`, the final model's
     * logits, and `trajz(doc_id, y, zq)`, every doc's logit after each of
@@ -1248,10 +1282,7 @@ object TrainingDataClassifier {
   private def clfTrajCtes: String = {
     val stepUnion = (2 to 20).map(k => s"SELECT doc_id, y, zq FROM z$k")
       .mkString(" UNION ALL ")
-    s"""zf AS MATERIALIZED (SELECT doc_id, y,
-          CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
-            AS BIGINT) AS zq
-        FROM tf, w20 GROUP BY doc_id, y),
+    s"""${clfLogitCte("zf", mat = true)},
       trajz AS ($stepUnion UNION ALL SELECT doc_id, y, zq FROM zf)"""
   }
 
@@ -1292,7 +1323,7 @@ object TrainingDataClassifier {
       SELECT b AS bucket, ROUND(w[b + 1], 6) AS weight
       FROM w20, range(0, 68) t(b) ORDER BY bucket""",
     "x142_label_noise" -> s"""$clfTrainedSql,
-      $clfScoredCtes,
+      ${clfScoredCtes()},
       sc AS (SELECT p.doc_id, p.y, p.pq, d.source
         FROM ps p JOIN documents d USING (doc_id)),
       th AS (SELECT
@@ -1318,21 +1349,13 @@ object TrainingDataClassifier {
         CAST(t0 AS DOUBLE) / 1e6 AS t0
       FROM sc, th GROUP BY source, t1, t0 ORDER BY source""",
     "x139_uncertainty_sample" -> s"""$clfTrainedSql,
-      zs AS (SELECT doc_id, y,
-          CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
-            AS BIGINT) AS zq
-        FROM tf, w20 GROUP BY doc_id, y),
+      ${clfLogitCte("zs")},
       ps AS (SELECT doc_id,
-          ABS(CAST(ROUND((1 / (1 + exp(-(CAST(zq AS DOUBLE) / 1e9)))) * 1e6,
-            0) AS BIGINT) - 500000) AS mg
+          ABS($clfProbSql - 500000) AS mg
         FROM zs),
       sc AS (SELECT p.doc_id, p.mg, d.source
         FROM ps p JOIN documents d USING (doc_id)),
-      h AS (SELECT mg, CAST(COUNT(*) AS BIGINT) AS cnt FROM sc GROUP BY mg),
-      tt AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n FROM h),
-      c AS (SELECT mg, CAST(SUM(cnt) OVER (ORDER BY mg) AS BIGINT) AS cum
-        FROM h),
-      cut AS (SELECT MIN(mg) AS cut05 FROM c, tt WHERE cum * 20 >= n)
+      ${cutCtes("mg", "cut05", "cum * 20 >= n")}
       SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
         CAST(SUM(CASE WHEN mg < cut05 THEN 1 ELSE 0 END) AS BIGINT)
           AS n_sel,
@@ -1346,7 +1369,7 @@ object TrainingDataClassifier {
         CAST(cut05 AS DOUBLE) / 1e6 AS cut_margin
       FROM sc, cut GROUP BY source, cut05 ORDER BY source""",
     "x138_clf_roc" -> s"""$clfTrainedSql,
-      $clfScoredCtes,
+      ${clfScoredCtes()},
       hist AS MATERIALIZED (SELECT pq, CAST(SUM(y) AS BIGINT) AS pos,
           CAST(SUM(1 - y) AS BIGINT) AS neg
         FROM ps GROUP BY pq),
@@ -1375,10 +1398,7 @@ object TrainingDataClassifier {
         auc
       FROM th, au ORDER BY t""",
     "x136_temp_scaling" -> s"""$clfTrainedSql,
-      zs AS (SELECT doc_id, y,
-          CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
-            AS BIGINT) AS zq
-        FROM tf, w20 GROUP BY doc_id, y),
+      ${clfLogitCte("zs")},
       vz AS (SELECT * FROM zs
         WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
           % 100 BETWEEN 90 AND 94),
@@ -1401,33 +1421,19 @@ object TrainingDataClassifier {
           CAST(COUNT(*) AS BIGINT) AS n_docs,
           CAST(SUM(pq) AS BIGINT) AS spq, CAST(SUM(y) AS BIGINT) AS sy
         FROM cp GROUP BY 1, 2)
-      SELECT bin, n_docs,
-        CAST(((2 * spq + n_docs) // (2 * n_docs)) AS DOUBLE) / 1e6
-          AS mean_pred,
-        CAST(((2 * sy * 1000000 + n_docs) // (2 * n_docs)) AS DOUBLE) / 1e6
-          AS pos_rate,
-        CAST(ABS(((2 * spq + n_docs) // (2 * n_docs))
-          - ((2 * sy * 1000000 + n_docs) // (2 * n_docs))) AS DOUBLE) / 1e6
-          AS gap,
+      $calibrationCols,
         CAST(tq AS DOUBLE) / 1e2 AS t
       FROM bn ORDER BY bin""",
     "x118_clf_calibration" -> s"""$clfTrainedSql,
-      $clfScoredCtes,
+      ${clfScoredCtes()},
       bs AS (SELECT LEAST(pq // 100000, 9) AS bin,
           CAST(COUNT(*) AS BIGINT) AS n_docs,
           CAST(SUM(pq) AS BIGINT) AS spq, CAST(SUM(y) AS BIGINT) AS sy
         FROM ps GROUP BY 1)
-      SELECT bin, n_docs,
-        CAST(((2 * spq + n_docs) // (2 * n_docs)) AS DOUBLE) / 1e6
-          AS mean_pred,
-        CAST(((2 * sy * 1000000 + n_docs) // (2 * n_docs)) AS DOUBLE) / 1e6
-          AS pos_rate,
-        CAST(ABS(((2 * spq + n_docs) // (2 * n_docs))
-            - ((2 * sy * 1000000 + n_docs) // (2 * n_docs))) AS DOUBLE) / 1e6
-          AS gap
+      $calibrationCols
       FROM bs ORDER BY bin""",
     "x122_clf_filter" -> s"""$clfTrainedSql,
-      $clfScoredCtes,
+      ${clfScoredCtes()},
       j AS (SELECT d.source, p.pq, p.y
         FROM ps p JOIN documents d USING (doc_id))
       SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -1442,13 +1448,9 @@ object TrainingDataClassifier {
           AS agree_rate
       FROM j GROUP BY source ORDER BY source""",
     "x164_wilson_bound" -> s"""$clfTrainedSql,
-      zs AS (SELECT doc_id, y,
-          CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
-            AS BIGINT) AS zq
-        FROM tf, w20 GROUP BY doc_id, y),
+      ${clfLogitCte("zs")},
       ps AS (SELECT doc_id,
-          CASE WHEN CAST(ROUND((1 / (1 + exp(-(CAST(zq AS DOUBLE)
-            / 1e9)))) * 1e6, 0) AS BIGINT) >= 500000
+          CASE WHEN $clfProbSql >= 500000
           THEN 1 ELSE 0 END AS kept
         FROM zs),
       ct AS (SELECT d.source, CAST(COUNT(*) AS BIGINT) AS n,
@@ -1467,13 +1469,9 @@ object TrainingDataClassifier {
           AS DOUBLE) / 1e4 AS wilson_lb
       FROM ct ORDER BY source""",
     "x163_cohen_kappa" -> s"""$clfTrainedSql,
-      zs AS (SELECT doc_id, y,
-          CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
-            AS BIGINT) AS zq
-        FROM tf, w20 GROUP BY doc_id, y),
+      ${clfLogitCte("zs")},
       ps AS (SELECT doc_id, y,
-          CASE WHEN CAST(ROUND((1 / (1 + exp(-(CAST(zq AS DOUBLE)
-            / 1e9)))) * 1e6, 0) AS BIGINT) >= 500000
+          CASE WHEN $clfProbSql >= 500000
           THEN 1 ELSE 0 END AS yhat
         FROM zs),
       ct AS (SELECT d.source, CAST(COUNT(*) AS BIGINT) AS n,
@@ -1498,14 +1496,7 @@ object TrainingDataClassifier {
       tst AS (SELECT * FROM tfall
         WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
           % 100 >= 90),
-      zt AS (SELECT doc_id, y,
-          CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
-            AS BIGINT) AS zq
-        FROM tst, w20 GROUP BY doc_id, y),
-      pt AS (SELECT doc_id, y,
-          CAST(ROUND((1 / (1 + exp(-(CAST(zq AS DOUBLE) / 1e9)))) * 1e6, 0)
-            AS BIGINT) AS pq
-        FROM zt),
+      ${clfScoredCtes(from = "tst", z = "zt", p = "pt")},
       ag2 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_test,
           CAST(SUM(CASE WHEN (pq >= 500000) = (y = 1) THEN 1 ELSE 0 END)
             AS BIGINT) AS n_corr
@@ -1523,14 +1514,7 @@ object TrainingDataClassifier {
         zq > 19600 AS drift
       FROM zz, nn""",
     "x173_gradient_noise" -> s"""$clfTrainedSql,
-      zs AS (SELECT doc_id, y,
-          CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
-            AS BIGINT) AS zq
-        FROM tf, w20 GROUP BY doc_id, y),
-      ps AS (SELECT doc_id,
-          CAST(ROUND((1 / (1 + exp(-(CAST(zq AS DOUBLE) / 1e9)))) * 1e6, 0)
-            AS BIGINT) AS pq
-        FROM zs),
+      ${clfScoredCtes("doc_id")},
       gg AS (SELECT t.bucket,
           CAST(ROUND(CAST(p.pq - t.y * 1000000 AS DOUBLE) * t.x, 0)
             AS BIGINT) AS gq
@@ -1556,8 +1540,7 @@ object TrainingDataClassifier {
     "x159_tracin_self" -> s"""$clfTrainedSql,
       $clfTrajCtes,
       dqt AS (SELECT doc_id, y,
-          CAST(ROUND((1 / (1 + exp(-(CAST(zq AS DOUBLE) / 1e9))))
-            * 1e6, 0) AS BIGINT) - y * 1000000 AS dq
+          $clfProbSql - y * 1000000 AS dq
         FROM trajz),
       am AS (SELECT doc_id, y,
           (2 * CAST(SUM(dq * dq) AS BIGINT) + 1000000) // 2000000 AS a6
@@ -1579,10 +1562,7 @@ object TrainingDataClassifier {
       $clfTrajCtes,
       ptr AS (SELECT doc_id, y,
           CASE WHEN y = 1 THEN pq ELSE 1000000 - pq END AS ptq
-        FROM (SELECT doc_id, y,
-            CAST(ROUND((1 / (1 + exp(-(CAST(zq AS DOUBLE) / 1e9))))
-              * 1e6, 0) AS BIGINT) AS pq
-          FROM trajz)),
+        FROM (${trajProbSql("doc_id, y")})),
       pd AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS k,
           CAST(SUM(ptq) AS BIGINT) AS sp,
           CAST(SUM(ptq * ptq) AS BIGINT) AS spp,
@@ -1634,18 +1614,12 @@ object TrainingDataClassifier {
         .map(k => s"SELECT doc_id, y, CAST(${k - 1} AS BIGINT) AS step, zq FROM z$k")
         .mkString(" UNION ALL ")
       s"""$clfTrainedSql,
-      zf AS MATERIALIZED (SELECT doc_id, y,
-          CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
-            AS BIGINT) AS zq
-        FROM tf, w20 GROUP BY doc_id, y),
+      ${clfLogitCte("zf", mat = true)},
       trajz AS ($stepUnion
         UNION ALL SELECT doc_id, y, CAST(20 AS BIGINT), zq FROM zf),
       okt AS (SELECT doc_id, y, step,
           (CASE WHEN y = 1 THEN pq ELSE 1000000 - pq END) >= 500000 AS ok
-        FROM (SELECT doc_id, y, step,
-            CAST(ROUND((1 / (1 + exp(-(CAST(zq AS DOUBLE) / 1e9))))
-              * 1e6, 0) AS BIGINT) AS pq
-          FROM trajz)),
+        FROM (${trajProbSql("doc_id, y, step")})),
       fg AS (SELECT doc_id, y, ok,
           CASE WHEN LAG(ok) OVER (PARTITION BY doc_id ORDER BY step)
             AND NOT ok THEN 1 ELSE 0 END AS forgot
@@ -1670,10 +1644,7 @@ object TrainingDataClassifier {
       $clfTrajCtes,
       ptr AS (SELECT doc_id, y,
           CASE WHEN y = 1 THEN pq ELSE 1000000 - pq END AS ptq
-        FROM (SELECT doc_id, y,
-            CAST(ROUND((1 / (1 + exp(-(CAST(zq AS DOUBLE) / 1e9))))
-              * 1e6, 0) AS BIGINT) AS pq
-          FROM trajz)),
+        FROM (${trajProbSql("doc_id, y")})),
       pd AS (SELECT doc_id, y, CAST(COUNT(*) AS BIGINT) AS k,
           CAST(SUM(ptq) AS BIGINT) AS sp,
           CAST(SUM(ptq * ptq) AS BIGINT) AS spp
@@ -1698,7 +1669,7 @@ object TrainingDataClassifier {
           AS DOUBLE) / 1e6 AS mean_vari
       FROM rg GROUP BY region, y ORDER BY region, y""",
     "x150_el2n_prune" -> s"""$clfTrainedSql,
-      $clfScoredCtes,
+      ${clfScoredCtes()},
       sc AS MATERIALIZED (SELECT d.source, p.y,
           abs(p.pq - p.y * 1000000) AS el2n_q
         FROM ps p JOIN documents d USING (doc_id)),
@@ -1726,23 +1697,12 @@ object TrainingDataClassifier {
           AS pos_share_after
       FROM ag ORDER BY source""",
     "x131_anneal_select" -> s"""$clfTrainedSql,
-      zs AS (SELECT doc_id, y,
-          CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
-            AS BIGINT) AS zq
-        FROM tf, w20 GROUP BY doc_id, y),
-      ps AS (SELECT doc_id,
-          CAST(ROUND((1 / (1 + exp(-(CAST(zq AS DOUBLE) / 1e9)))) * 1e6, 0)
-            AS BIGINT) AS pq
-        FROM zs),
+      ${clfScoredCtes("doc_id")},
       sc AS (SELECT p.doc_id, p.pq, d.source,
           CAST(len(regexp_split_to_array(trim(d.text), '\\s+')) AS BIGINT)
             AS n_tok
         FROM ps p JOIN documents d USING (doc_id)),
-      h AS (SELECT pq, CAST(COUNT(*) AS BIGINT) AS cnt FROM sc GROUP BY pq),
-      tt AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n FROM h),
-      c AS (SELECT pq, CAST(SUM(cnt) OVER (ORDER BY pq) AS BIGINT) AS cum
-        FROM h),
-      cut AS (SELECT MIN(pq) AS cut90 FROM c, tt WHERE cum * 10 >= n * 9)
+      ${cutCtes("pq", "cut90", "cum * 10 >= n * 9")}
       SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
         CAST(SUM(CASE WHEN pq > cut90 THEN 1 ELSE 0 END) AS BIGINT)
           AS n_sel,

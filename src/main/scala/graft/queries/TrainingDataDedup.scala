@@ -1427,30 +1427,71 @@ object TrainingDataDedup {
   // crafted sub-population pins, not silent caps; the corpus-wide
   // dedup paths are x1/x59/x98 (unsliced) and x126 carries the staged
   // full-corpus winnow store.
-  /** Shared CTE chain for x14/x24: exact Jaccard pairs → undirected
-    * edges → recursive transitive closure → per-doc canonical label. */
-  private lazy val dedupClusterCtes = s"""
-      WITH RECURSIVE corpus AS (
-        SELECT doc_id, text FROM $corpusSql WHERE doc_id % 1000000 < 200),
-      $shingleRowsCte,
+  /** The exact word-3-gram Jaccard inputs over `corpus(doc_id, text)`
+    * ([[graft.dedup.NearDup.ngramJaccardPairs]]): [[shingleRowsCte]],
+    * `sizes(doc_id, n)` and [[selfInterCte]]. */
+  private def jaccardInterCtes: String = s"""$shingleRowsCte,
       sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-      inter AS (
+      $selfInterCte"""
+
+  /** `inter(id_a, id_b, inter)`: the shingles of `sh` each pair with
+    * id_a < id_b shares. */
+  private def selfInterCte: String = """inter AS (
         SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
         FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2),
-      p AS (
-        SELECT id_a, id_b
-        FROM inter
+        GROUP BY 1, 2)"""
+
+  private def jaccardSql: String =
+    "ROUND(CAST(inter AS DOUBLE) / (na + nb - inter), 4)"
+
+  /** `inter` joined to both docs' `sizes` as `na` and `nb`. */
+  private def interSizesSql: String = """FROM inter
         JOIN (SELECT doc_id AS id_a, n AS na FROM sizes) USING (id_a)
-        JOIN (SELECT doc_id AS id_b, n AS nb FROM sizes) USING (id_b)
-        WHERE ROUND(CAST(inter AS DOUBLE) / (na + nb - inter), 4) >= 0.5),
+        JOIN (SELECT doc_id AS id_b, n AS nb FROM sizes) USING (id_b)"""
+
+  /** The [[jaccardInterCtes]] pairs with rounded Jaccard ≥ `t`, with
+    * the score as `jaccard` when `score`. */
+  private def jaccardPairsSql(t: String, score: Boolean): String =
+    s"""SELECT id_a, id_b${if (score) s",\n          $jaccardSql AS jaccard" else ""}
+        $interSizesSql
+        WHERE $jaccardSql >= $t"""
+
+  /** Exact Jaccard ≥ 0.5 pairs `p` over `corpus` → undirected edges →
+    * recursive transitive closure → per-doc canonical label
+    * `labels(doc_id, canonico)`; the query needs WITH RECURSIVE. */
+  private def clusterLabelCtes: String = s"""$jaccardInterCtes,
+      p AS (
+        ${jaccardPairsSql("0.5", score = false)}),
       $reachCtes,
       labels AS (
         SELECT c.doc_id,
-          LEAST(c.doc_id, COALESCE(m.mn, c.doc_id)) AS canonico
+          ${reachMinSql("c.doc_id")} AS canonico
         FROM corpus c
-        LEFT JOIN (SELECT a, MIN(b) AS mn FROM reach GROUP BY a) m
-          ON c.doc_id = m.a)"""
+        ${reachMinJoinSql("c.doc_id")})"""
+
+  /** Shared CTE chain for x14/x24: [[clusterLabelCtes]] over the
+    * [[sliverCorpusSql]] corpus. */
+  private lazy val dedupClusterCtes = s"""
+      WITH RECURSIVE corpus AS (
+        $sliverCorpusSql),
+      $clusterLabelCtes"""
+
+  /** Each [[sliverCorpusSql]] doc's distinct whitespace tokens `tok`. */
+  private def sliverToksSql: String = s"""SELECT doc_id,
+                              unnest(list_distinct(
+                                regexp_split_to_array(trim(text), '\\s+'))) AS tok
+                            FROM $corpusSql
+                            WHERE doc_id % 1000000 < 200"""
+
+  /** The doc pairs of a signature relation `sigs` whose column `c`
+    * differs in at most 3 bits. */
+  private def hammingPairsSql(sigs: String, c: String): String = s"""
+      WITH sigs AS (SELECT * FROM $sigs)
+      SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+        CAST(bit_count(xor(a.$c, b.$c)) AS INT) AS hamming
+      FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
+      WHERE bit_count(xor(a.$c, b.$c)) <= 3
+      ORDER BY id_a, id_b"""
 
   private val simhash32Sql: String = {
     val hex32 = (0 until 8).map { i =>
@@ -1466,11 +1507,7 @@ object TrainingDataDedup {
           SELECT doc_id, $votes
           FROM (SELECT doc_id, $hex32 AS h
                 FROM (SELECT doc_id, substring(md5(tok), 1, 8) AS hx
-                      FROM (SELECT doc_id,
-                              unnest(list_distinct(
-                                regexp_split_to_array(trim(text), '\\s+'))) AS tok
-                            FROM $corpusSql
-                            WHERE doc_id % 1000000 < 200)))
+                      FROM ($sliverToksSql)))
           GROUP BY doc_id))"""
   }
 
@@ -1522,11 +1559,7 @@ object TrainingDataDedup {
           SELECT doc_id, $votes
           FROM (SELECT doc_id, ${hexVal(1)} AS hi, ${hexVal(9)} AS lo
                 FROM (SELECT doc_id, substring(md5(tok), 1, 16) AS hx
-                      FROM (SELECT doc_id,
-                              unnest(list_distinct(
-                                regexp_split_to_array(trim(text), '\\s+'))) AS tok
-                            FROM $corpusSql
-                            WHERE doc_id % 1000000 < 200)))
+                      FROM ($sliverToksSql)))
           GROUP BY doc_id))"""
   }
 
@@ -1577,11 +1610,44 @@ object TrainingDataDedup {
         FROM minh GROUP BY doc_id, j // 4)"""
   }
 
+  /** [[minhashBandCtes]], then `cand(id_a, id_b)`: the distinct pairs
+    * sharing a band key ([[graft.dedup.NearDup.minhashLshPairs]]'s
+    * candidates). */
+  private def lshCandCtes: String = s"""$minhashBandCtes,
+      cand AS (
+        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
+        WHERE a.doc_id < b.doc_id)"""
+
+  /** x91/x105's [[lshEvalCorpusSql]] corpus with its shingles,
+    * sizes, LSH candidates and exact intersections. */
+  private def lshEvalCandCtes: String = s"""corpus AS (
+        $lshEvalCorpusSql),
+      $shingleSetCtes,
+      $shingleSizesCte,
+      $lshCandCtes,
+      $selfInterCte"""
+
+  private def shingleSizesCte: String =
+    "sizes AS (SELECT doc_id, len(shs) AS n FROM docs)"
+
+  private def candJaccardSql: String =
+    "ROUND(CAST(i.inter AS DOUBLE) / (sa.n + sb.nb - i.inter), 4)"
+
+  /** The exact verify of the [[lshCandCtes]] candidates: each joined
+    * to its `inter` and both `sizes`, kept where [[candJaccardSql]]
+    * satisfies `cond`. */
+  private def candVerifySql(cond: String): String = s"""FROM cand c
+        JOIN inter i USING (id_a, id_b)
+        JOIN (SELECT doc_id AS id_a, n FROM sizes) sa USING (id_a)
+        JOIN (SELECT doc_id AS id_b, n AS nb FROM sizes) sb USING (id_b)
+        WHERE $candJaccardSql $cond"""
+
   /** DuckDB mirror of [[lshEvalCorpus]]: the dup-corpus sliver plus its
     * 50%- and 75%-prefix copies (+3M/+4M ids), as a (doc_id, text)
     * query body. */
   private def lshEvalCorpusSql: String = s"""
-        SELECT doc_id, text FROM $corpusSql WHERE doc_id % 1000000 < 200
+        $sliverCorpusSql
         UNION ALL
         SELECT doc_id + 3000000,
           array_to_string(list_slice(toks, 1,
@@ -1670,13 +1736,8 @@ object TrainingDataDedup {
       FROM sz s JOIN pk k USING (cluster)
       WHERE s.size >= 2 ORDER BY s.cluster"""
     },
-    "x137_exact_substring" -> """
-      WITH t AS (SELECT doc_id,
-          regexp_split_to_array(trim('portal ' || source
-            || ' official mirror terms of service apply'
-            || ' all rights reserved contact webmaster ' || text),
-            '\s+') AS toks
-        FROM documents),
+    "x137_exact_substring" -> s"""
+      WITH $boilerToksCte,
       g AS (SELECT doc_id, r.i - 1 AS gi,
           md5(array_to_string(list_slice(toks, CAST(r.i AS INT),
             CAST(r.i + 4 AS INT)), ' ')) AS fp
@@ -1720,25 +1781,10 @@ object TrainingDataDedup {
           // (2 * cl.n_tok)) AS DOUBLE) / 1e4 AS dup_rate,
         COALESCE(sp.n_spans, 0) AS n_spans,
         COALESCE(sp.max_span, 0) AS max_span,
-        md5(clean) AS clean_md5,
-        CASE WHEN length(clean) = 0 THEN CAST(0 AS BIGINT)
-          ELSE CAST(len(regexp_split_to_array(clean, '\s+')) AS BIGINT) END
-          AS clean_n_tok
+        $cleanStatsSql
       FROM cl LEFT JOIN sp USING (doc_id) ORDER BY cl.doc_id""",
-    "x112_firstocc_dedup" -> """
-      WITH t AS (SELECT doc_id,
-          regexp_split_to_array(trim('portal ' || source
-            || ' official mirror terms of service apply'
-            || ' all rights reserved contact webmaster ' || text),
-            '\s+') AS toks
-        FROM documents),
-      b AS (SELECT doc_id, toks,
-          unnest(range(0, (len(toks) + 7) // 8)) AS g FROM t),
-      seg AS (SELECT doc_id, g,
-          array_to_string(list_slice(toks, g * 8 + 1, g * 8 + 8), ' ')
-            AS segtxt
-        FROM b),
-      sf AS (SELECT doc_id, g, segtxt, md5(segtxt) AS fp FROM seg),
+    "x112_firstocc_dedup" -> s"""
+      WITH $boilerSegmentCtes,
       fo AS (SELECT fp, doc_id AS fdoc, g AS fg FROM (
           SELECT fp, doc_id, g,
             ROW_NUMBER() OVER (PARTITION BY fp ORDER BY doc_id, g) AS rk
@@ -1753,10 +1799,7 @@ object TrainingDataDedup {
         FROM sf s JOIN fo f USING (fp) GROUP BY s.doc_id)
       SELECT doc_id, CAST(n_seg AS BIGINT) AS n_seg,
         CAST(n_drop AS BIGINT) AS n_drop,
-        md5(clean) AS clean_md5,
-        CASE WHEN length(clean) = 0 THEN CAST(0 AS BIGINT)
-          ELSE CAST(len(regexp_split_to_array(clean, '\s+')) AS BIGINT) END
-          AS clean_n_tok
+        $cleanStatsSql
       FROM agg ORDER BY doc_id""",
     "x77_soft_dedup_weights" -> s"""
       $dedupClusterCtes,
@@ -1770,31 +1813,13 @@ object TrainingDataDedup {
       ORDER BY l.doc_id""",
     "x73_dup_graph_stats" -> s"""
       WITH RECURSIVE corpus AS (
-        SELECT doc_id, text FROM $corpusSql WHERE doc_id % 1000000 < 200
+        $sliverCorpusSql
         UNION ALL
         SELECT doc_id + 3000000,
           array_to_string(list_slice(toks, 1, (3 * len(toks)) // 5), ' ')
         FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
               FROM documents WHERE doc_id % 1000000 < 200)),
-      $shingleRowsCte,
-      sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-      inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2),
-      p AS (
-        SELECT id_a, id_b
-        FROM inter
-        JOIN (SELECT doc_id AS id_a, n AS na FROM sizes) USING (id_a)
-        JOIN (SELECT doc_id AS id_b, n AS nb FROM sizes) USING (id_b)
-        WHERE ROUND(CAST(inter AS DOUBLE) / (na + nb - inter), 4) >= 0.5),
-      $reachCtes,
-      labels AS (
-        SELECT c.doc_id,
-          LEAST(c.doc_id, COALESCE(m.mn, c.doc_id)) AS canonico
-        FROM corpus c
-        LEFT JOIN (SELECT a, MIN(b) AS mn FROM reach GROUP BY a) m
-          ON c.doc_id = m.a),
+      $clusterLabelCtes,
       deg AS (SELECT doc_id, COUNT(*) AS k FROM (
           SELECT id_a AS doc_id FROM p
           UNION ALL SELECT id_b FROM p) GROUP BY doc_id),
@@ -1807,7 +1832,7 @@ object TrainingDataDedup {
       ORDER BY stat, k""",
     "x71_split_leakage" -> s"""
       WITH corpus AS (
-        SELECT doc_id, text FROM $corpusSql WHERE doc_id % 1000000 < 200),
+        $sliverCorpusSql),
       splits AS (SELECT doc_id,
           CASE WHEN b < 90 THEN 'train' WHEN b < 95 THEN 'val'
             ELSE 'test' END AS split
@@ -1815,18 +1840,9 @@ object TrainingDataDedup {
             ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
               % 100 AS b
           FROM corpus)),
-      $shingleRowsCte,
-      sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-      inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2),
+      $jaccardInterCtes,
       p AS (
-        SELECT id_a, id_b
-        FROM inter
-        JOIN (SELECT doc_id AS id_a, n AS na FROM sizes) USING (id_a)
-        JOIN (SELECT doc_id AS id_b, n AS nb FROM sizes) USING (id_b)
-        WHERE ROUND(CAST(inter AS DOUBLE) / (na + nb - inter), 4) >= 0.5),
+        ${jaccardPairsSql("0.5", score = false)}),
       cross_p AS (
         SELECT p.id_a, p.id_b, sa.split AS split_a, sb.split AS split_b
         FROM p
@@ -1847,20 +1863,10 @@ object TrainingDataDedup {
       ORDER BY t.split""",
     "x72_edit_verify" -> s"""
       WITH corpus AS (
-        SELECT doc_id, text FROM $corpusSql WHERE doc_id % 1000000 < 200),
-      $shingleRowsCte,
-      sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-      inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2),
+        $sliverCorpusSql),
+      $jaccardInterCtes,
       p AS (
-        SELECT id_a, id_b,
-          ROUND(CAST(inter AS DOUBLE) / (na + nb - inter), 4) AS jaccard
-        FROM inter
-        JOIN (SELECT doc_id AS id_a, n AS na FROM sizes) USING (id_a)
-        JOIN (SELECT doc_id AS id_b, n AS nb FROM sizes) USING (id_b)
-        WHERE ROUND(CAST(inter AS DOUBLE) / (na + nb - inter), 4) >= 0.3),
+        ${jaccardPairsSql("0.3", score = true)}),
       v AS (
         SELECT p.id_a, p.id_b, p.jaccard,
           CAST(levenshtein(ca.text, cb.text) AS BIGINT) AS lev,
@@ -1965,13 +1971,9 @@ object TrainingDataDedup {
       FROM wf w LEFT JOIN nbr n USING (doc_id) ORDER BY doc_id""",
     "x124_bbit_minhash" -> s"""
       WITH corpus AS (
-        SELECT doc_id, text FROM $corpusSql WHERE doc_id % 1000000 < 200),
+        $sliverCorpusSql),
       $shingleSetCtes,
-      $minhashBandCtes,
-      cand AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
-        WHERE a.doc_id < b.doc_id),
+      $lshCandCtes,
       sizes AS (SELECT doc_id, CAST(len(shs) AS BIGINT) AS n FROM docs),
       inter AS (
         SELECT c.id_a, c.id_b, CAST(COUNT(*) AS BIGINT) AS inter
@@ -2012,29 +2014,12 @@ object TrainingDataDedup {
           AS err_bbit
       FROM e GROUP BY band ORDER BY band""",
     "x105_threshold_sweep" -> s"""
-      WITH corpus AS (
-        $lshEvalCorpusSql),
-      $shingleSetCtes,
-      sizes AS (SELECT doc_id, len(shs) AS n FROM docs),
-      $minhashBandCtes,
-      cand AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
-        WHERE a.doc_id < b.doc_id),
-      inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2),
+      WITH $lshEvalCandCtes,
       jc AS (
         SELECT c.id_a, c.id_b,
-          ROUND(CAST(i.inter AS DOUBLE) / (sa.n + sb.nb - i.inter), 4)
+          $candJaccardSql
             AS jaccard
-        FROM cand c
-        JOIN inter i USING (id_a, id_b)
-        JOIN (SELECT doc_id AS id_a, n FROM sizes) sa USING (id_a)
-        JOIN (SELECT doc_id AS id_b, n AS nb FROM sizes) sb USING (id_b)
-        WHERE ROUND(CAST(i.inter AS DOUBLE) / (sa.n + sb.nb - i.inter), 4)
-          >= 0.3),
+        ${candVerifySql(">= 0.3")}),
       tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_total FROM corpus),
       ex AS (SELECT unnest([id_a, id_b]) AS doc_id, jaccard FROM jc),
       sweep AS (
@@ -2047,27 +2032,10 @@ object TrainingDataDedup {
           / 1e4 AS share
       FROM sweep, tot ORDER BY threshold""",
     "x91_lsh_precision" -> s"""
-      WITH corpus AS (
-        $lshEvalCorpusSql),
-      $shingleSetCtes,
-      sizes AS (SELECT doc_id, len(shs) AS n FROM docs),
-      $minhashBandCtes,
-      cand AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
-        WHERE a.doc_id < b.doc_id),
-      inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2),
+      WITH $lshEvalCandCtes,
       jc AS (
-        SELECT LEAST(FLOOR(ROUND(CAST(i.inter AS DOUBLE)
-            / (sa.n + sb.nb - i.inter), 4) * 10) / 10, 0.9) AS band
-        FROM cand c
-        JOIN inter i USING (id_a, id_b)
-        JOIN (SELECT doc_id AS id_a, n FROM sizes) sa USING (id_a)
-        JOIN (SELECT doc_id AS id_b, n AS nb FROM sizes) sb USING (id_b)
-        WHERE ROUND(CAST(i.inter AS DOUBLE) / (sa.n + sb.nb - i.inter), 4) > 0),
+        SELECT LEAST(FLOOR($candJaccardSql * 10) / 10, 0.9) AS band
+        ${candVerifySql("> 0")}),
       g AS (SELECT band, COUNT(*) AS n_cand FROM jc GROUP BY band),
       tot AS (SELECT band, n_cand, SUM(n_cand) OVER () AS n_total FROM g)
       SELECT band, CAST(n_cand AS BIGINT) AS n_cand,
@@ -2079,23 +2047,11 @@ object TrainingDataDedup {
       WITH corpus AS (
         $lshEvalCorpusSql),
       $shingleSetCtes,
-      sizes AS (SELECT doc_id, len(shs) AS n FROM docs),
-      inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2),
+      $shingleSizesCte,
+      $selfInterCte,
       truth AS (
-        SELECT id_a, id_b,
-          ROUND(CAST(inter AS DOUBLE) / (na + nb - inter), 4) AS jaccard
-        FROM inter
-        JOIN (SELECT doc_id AS id_a, n AS na FROM sizes) USING (id_a)
-        JOIN (SELECT doc_id AS id_b, n AS nb FROM sizes) USING (id_b)
-        WHERE ROUND(CAST(inter AS DOUBLE) / (na + nb - inter), 4) >= 0.3),
-      $minhashBandCtes,
-      cand AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
-        WHERE a.doc_id < b.doc_id),
+        ${jaccardPairsSql("0.3", score = true)}),
+      $lshCandCtes,
       det AS (
         SELECT t.jaccard,
           CASE WHEN c.id_a IS NOT NULL THEN 1 ELSE 0 END AS hit
@@ -2117,24 +2073,17 @@ object TrainingDataDedup {
       FROM ms ORDER BY band""",
     "x58_containment_dedup" -> s"""
       WITH corpus AS (
-        SELECT doc_id, text FROM $corpusSql WHERE doc_id % 1000000 < 200
+        $sliverCorpusSql
         UNION ALL
         SELECT doc_id + 3000000,
           array_to_string(list_slice(
             regexp_split_to_array(trim(text), '\\s+'), 1, 12), ' ')
         FROM documents WHERE doc_id % 1000000 < 200),
-      $shingleRowsCte,
-      sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-      inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2)
+      $jaccardInterCtes
       SELECT id_a, id_b,
         ROUND(CAST(inter AS DOUBLE) / LEAST(na, nb), 4) AS containment,
-        ROUND(CAST(inter AS DOUBLE) / (na + nb - inter), 4) AS jaccard
-      FROM inter
-      JOIN (SELECT doc_id AS id_a, n AS na FROM sizes) USING (id_a)
-      JOIN (SELECT doc_id AS id_b, n AS nb FROM sizes) USING (id_b)
+        $jaccardSql AS jaccard
+      $interSizesSql
       WHERE ROUND(CAST(inter AS DOUBLE) / LEAST(na, nb), 4) >= 0.9
       ORDER BY id_a, id_b""",
     "x59_dedup_mass" -> s"""
@@ -2199,18 +2148,9 @@ object TrainingDataDedup {
       $dedupClusterCtes,
       q AS (
         SELECT doc_id,
-          ROUND(LEAST(n_tok / 50.0, 1.0) * 0.4
-            + (1.0 - LEAST(punct_ratio * 5.0, 1.0)) * 0.3
-            + LEAST(stop_ratio * 10.0, 1.0) * 0.3, 4) AS quality
+          $qualityMixSql AS quality
         FROM (
-          SELECT doc_id, len(toks) AS n_tok,
-            CAST(length(text) - length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g'))
-              AS DOUBLE) / GREATEST(length(text), 1) AS punct_ratio,
-            CAST(len(list_filter(toks, t -> t IN ('the','a','of','and'))) AS DOUBLE)
-              / GREATEST(len(toks), 1) AS stop_ratio
-          FROM (SELECT doc_id, text,
-                  regexp_split_to_array(trim(text), '\\s+') AS toks
-                FROM corpus))),
+          ${qualityRatiosSql("doc_id", "corpus")})),
       j AS (SELECT l.doc_id, l.canonico, q.quality,
           ROW_NUMBER() OVER (PARTITION BY l.canonico
             ORDER BY q.quality DESC, l.doc_id) AS rk
@@ -2258,20 +2198,8 @@ object TrainingDataDedup {
       FROM batch b JOIN store s
         ON bit_count(xor(b.dhash, s.dhash)) <= 3
       ORDER BY new_id, old_id""",
-    "x85_dhash_neardup" -> s"""
-      WITH sigs AS (SELECT * FROM $dhashSql)
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        CAST(bit_count(xor(a.dhash, b.dhash)) AS INT) AS hamming
-      FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.dhash, b.dhash)) <= 3
-      ORDER BY id_a, id_b""",
-    "x23_simhash64_dedup" -> s"""
-      WITH sigs AS (SELECT * FROM $simhash64Sql)
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-      FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-      ORDER BY id_a, id_b""",
+    "x85_dhash_neardup" -> hammingPairsSql(dhashSql, "dhash"),
+    "x23_simhash64_dedup" -> hammingPairsSql(simhash64Sql, "simhash"),
     "x22_incremental_dedup" -> incrementalDedupSql,
     // x29 is the Bloom-prefiltered physical strategy for the SAME
     // logical result — no false negatives + exact verify of positives
@@ -2280,33 +2208,16 @@ object TrainingDataDedup {
     "x29_bloom_dedup" -> incrementalDedupSql,
     "x2_dedup_minhash" -> s"""
       WITH corpus AS (
-        SELECT doc_id, text FROM $corpusSql WHERE doc_id % 1000000 < 200),
+        $sliverCorpusSql),
       $shingleSetCtes,
-      $minhashBandCtes,
-      cand AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
-        WHERE a.doc_id < b.doc_id),
-      sizes AS (SELECT doc_id, len(shs) AS n FROM docs),
-      inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2)
+      $lshCandCtes,
+      $shingleSizesCte,
+      $selfInterCte
       SELECT c.id_a, c.id_b,
-        ROUND(CAST(i.inter AS DOUBLE) / (sa.n + sb.nb - i.inter), 4) AS jaccard
-      FROM cand c
-      JOIN inter i USING (id_a, id_b)
-      JOIN (SELECT doc_id AS id_a, n FROM sizes) sa USING (id_a)
-      JOIN (SELECT doc_id AS id_b, n AS nb FROM sizes) sb USING (id_b)
-      WHERE ROUND(CAST(i.inter AS DOUBLE) / (sa.n + sb.nb - i.inter), 4) >= 0.5
+        $candJaccardSql AS jaccard
+      ${candVerifySql(">= 0.5")}
       ORDER BY id_a, id_b""",
-    "x15_simhash_dedup" -> s"""
-      WITH sigs AS (SELECT * FROM $simhash32Sql)
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-      FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-      ORDER BY id_a, id_b""",
+    "x15_simhash_dedup" -> hammingPairsSql(simhash32Sql, "simhash"),
     "x14_dedup_clusters" -> s"""
       $dedupClusterCtes
       SELECT doc_id, canonico, doc_id = canonico AS sobrevivente
@@ -2319,14 +2230,7 @@ object TrainingDataDedup {
       ORDER BY l.doc_id""",
     "x152_quality_survivor" -> s"""
       $dedupClusterCtes,
-      q AS (SELECT doc_id, CAST(ROUND(ROUND(
-          LEAST(len(toks) / 50.0, 1.0) * 0.4
-          + (1.0 - LEAST(CAST(length(text) - length(regexp_replace(text,
-                '[^A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)
-              / GREATEST(length(text), 1) * 5.0, 1.0)) * 0.3
-          + LEAST(CAST(len(list_filter(toks,
-                t -> t IN ('the', 'a', 'of', 'and'))) AS DOUBLE)
-              / GREATEST(len(toks), 1) * 10.0, 1.0) * 0.3, 4) * 1e4, 0)
+      q AS (SELECT doc_id, CAST(ROUND($qualityRoundSql * 1e4, 0)
           AS BIGINT) AS q4
         FROM (SELECT doc_id, text,
             regexp_split_to_array(trim(text), '\\s+') AS toks
@@ -2357,19 +2261,9 @@ object TrainingDataDedup {
       GROUP BY 1 ORDER BY doc_id_mantido""",
     "x4_ngram_jaccard" -> s"""
       WITH corpus AS (
-        SELECT doc_id, text FROM $corpusSql WHERE doc_id % 1000000 < 200),
-      $shingleRowsCte,
-      sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-      inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2)
-      SELECT id_a, id_b,
-        ROUND(CAST(inter AS DOUBLE) / (na + nb - inter), 4) AS jaccard
-      FROM inter
-      JOIN (SELECT doc_id AS id_a, n AS na FROM sizes) USING (id_a)
-      JOIN (SELECT doc_id AS id_b, n AS nb FROM sizes) USING (id_b)
-      WHERE ROUND(CAST(inter AS DOUBLE) / (na + nb - inter), 4) >= 0.5
+        $sliverCorpusSql),
+      $jaccardInterCtes
+      ${jaccardPairsSql("0.5", score = true)}
       ORDER BY id_a, id_b""",
     "x3_simhash" -> {
       val votes = (0 until 16).map(i =>
@@ -2391,7 +2285,7 @@ object TrainingDataDedup {
     },
     "x33_substring_dedup" -> s"""
       WITH corpus AS (
-        SELECT doc_id, text FROM $corpusSql WHERE doc_id % 1000000 < 200),
+        $sliverCorpusSql),
       wins AS (
         SELECT DISTINCT doc_id, md5(substring(text, CAST(i AS INT) * 32 + 1, 64)) AS wh
         FROM corpus, UNNEST(range(0, (length(text) - 64) // 32 + 1)) AS t(i)

@@ -1611,8 +1611,7 @@ object TrainingDataLm {
   private def bpeIterCtes: String = {
     val sb = new StringBuilder
     sb ++= s"""v0 AS MATERIALIZED (SELECT w, f,
-        list_transform(range(1, length(w)+1), i ->
-          substring(w, CAST(i AS INT), 1)) AS syms FROM wf)"""
+        $charSymsSql FROM wf)"""
     for (k <- 1 to bpeK) {
       sb ++= s""",
       pc$k AS MATERIALIZED (
@@ -1643,8 +1642,7 @@ object TrainingDataLm {
   private def wpIterCtes: String = {
     val sb = new StringBuilder
     sb ++= s"""y0 AS MATERIALIZED (SELECT w, f,
-        list_transform(range(1, length(w)+1), i ->
-          substring(w, CAST(i AS INT), 1)) AS syms FROM wf)"""
+        $charSymsSql FROM wf)"""
     for (k <- 1 to bpeK) {
       sb ++= s""",
       yu$k AS MATERIALIZED (
@@ -1754,12 +1752,97 @@ object TrainingDataLm {
                 unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS w
                 FROM $from)
           WHERE w <> '' GROUP BY source, w),
-        g0 AS MATERIALIZED (SELECT w, CAST(0 AS BIGINT) AS f,
-          list_transform(range(1, length(w)+1), i ->
-            substring(w, CAST(i AS INT), 1)) AS syms
-          FROM (SELECT DISTINCT w FROM sw))""" +
+        ${bpeApplyCtes("g", "SELECT DISTINCT w FROM sw", "m")}"""
+
+  /** `<g>0`, the words of the query `words` split to characters, then
+    * `<g>1` … `<g><bpeK>`, re-merged by each merge `<m><k>` in turn. */
+  private def bpeApplyCtes(g: String, words: String, m: String): String =
+    s"""${g}0 AS MATERIALIZED (SELECT w, CAST(0 AS BIGINT) AS f,
+          $charSymsSql
+          FROM ($words))""" +
       (1 to bpeK).map(k => s""",
-        g$k AS MATERIALIZED (${bpeApplySql(s"g${k - 1}, m$k m")})""").mkString
+        $g$k AS MATERIALIZED (${bpeApplySql(s"$g${k - 1}, $m$k m")})""").mkString
+
+  /** `name(w, f)`: the counts of the lower-cased words of ≤ 16 chars
+    * in `from`, the unigram tokenizer's vocabulary. */
+  private def shortWordsCte(name: String, from: String): String =
+    s"""$name AS MATERIALIZED (
+        SELECT w, CAST(COUNT(*) AS BIGINT) AS f
+        FROM (SELECT unnest(regexp_split_to_array(trim(lower(text)), '\\s+'))
+            AS w
+          FROM $from)
+        WHERE w <> '' AND length(w) <= 16 GROUP BY w)"""
+
+  /** [[shortWordsCte]] over `documents`, per source: `name(source, w, f)`. */
+  private def shortSourceWordsCte(name: String): String =
+    s"""$name AS MATERIALIZED (
+        SELECT source, w, CAST(COUNT(*) AS BIGINT) AS f
+        FROM (SELECT source,
+            unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS w
+          FROM documents)
+        WHERE w <> '' AND length(w) <= 16 GROUP BY source, w)"""
+
+  /** A word `w` split into its characters as `syms`. */
+  private def charSymsSql: String = """list_transform(range(1, length(w)+1), i ->
+          substring(w, CAST(i AS INT), 1)) AS syms"""
+
+  /** The unigram tokenizer's Viterbi over words of ≤ 16 chars, as the
+    * unrolled DP CTEs `<t>1` … `<t>16` from `<t>0(w, scl, s0, e0)`:
+    * `s<i>` is the best score of the first i chars (pieces of ≤ 4
+    * chars, score list `scl`) and `e<i>` its piece-count tiebreak
+    * code; each CTE led by a comma. */
+  private def viterbiDpCtes(t: String): String = (1 to 16).map { i =>
+    val cands = (math.max(0, i - 4) until i).map { j =>
+      val k = j * 4 + (i - j)
+      (s"s$j + scl[$k]", s"e$j + scl[$k] * 32 - 1")
+    }
+    def mx(cs: Seq[String]) =
+      if (cs.size == 1) cs.head else cs.mkString("GREATEST(", ", ", ")")
+    s""",
+      $t$i AS MATERIALIZED (SELECT *, ${mx(cands.map(_._1))} AS s$i,
+        ${mx(cands.map(_._2))} AS e$i FROM $t${i - 1})"""
+  }.mkString
+
+  /** The list `[<v>1, …, <v>16]` of [[viterbiDpCtes]]' columns. */
+  private def viterbiList(v: String): String =
+    (1 to 16).map(i => s"$v$i").mkString("[", ", ", "]")
+
+  /** `cnt(w, c)`: each whitespace token's corpus count. */
+  private def wordCountCte: String = """cnt AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c
+        FROM (SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS w
+              FROM documents)
+        GROUP BY w)"""
+
+  /** `fof(r, n_r)`: the frequencies of [[wordCountCte]]'s counts. */
+  private def fofCte: String = """fof AS MATERIALIZED (
+        SELECT c AS r, CAST(COUNT(*) AS BIGINT) AS n_r
+        FROM cnt GROUP BY c)"""
+
+  /** The least-squares sums `sums(n, sx, sy, sxy, sxx)` over the
+    * 1e-6 log points `pts(lx, ly)`. */
+  private def fitSumsCte: String = """sums AS (SELECT CAST(COUNT(*) AS HUGEINT) AS n,
+          CAST(SUM(lx) AS HUGEINT) AS sx, CAST(SUM(ly) AS HUGEINT) AS sy,
+          CAST(SUM(CAST(lx AS HUGEINT) * ly) AS HUGEINT) AS sxy,
+          CAST(SUM(CAST(lx AS HUGEINT) * lx) AS HUGEINT) AS sxx
+        FROM pts)"""
+
+  /** The fitted slope over [[fitSumsCte]], rounded half away to 1e-6. */
+  private def fitSlopeSql: String = """(CASE WHEN n * sxy - sx * sy < 0 THEN -1 ELSE 1 END)
+            * ((2 * abs(n * sxy - sx * sy) * 1000000
+              + (n * sxx - sx * sx)) // (2 * (n * sxx - sx * sx)))
+            AS slope_q"""
+
+  /** [[fitSumsCte]], `ft` with the slope and `ft2(n, slope_q, a_q)`
+    * with the intercept, both in 1e-6 units. */
+  private def fitLineCtes: String = s"""$fitSumsCte,
+      ft AS (SELECT n, sx, sy,
+          $fitSlopeSql
+        FROM sums),
+      ft2 AS (SELECT n, slope_q,
+          (CASE WHEN sy * 1000000 - slope_q * sx < 0 THEN -1 ELSE 1 END)
+            * ((2 * abs(sy * 1000000 - slope_q * sx) + n * 1000000)
+              // (2 * n * 1000000)) AS a_q
+        FROM ft)"""
 
   /** x67/x153's vocabulary-growth CTEs over 10 doc_id buckets:
     * `arrivals(bucket, n_tok)` and `fresh(bucket, n_new_types)`, no
@@ -1827,14 +1910,9 @@ object TrainingDataLm {
             AS DOUBLE) / 1e4 AS fertility
         FROM stages ORDER BY source, k"""
     },
-    "x151_good_turing" -> """
-      WITH cnt AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c
-        FROM (SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS w
-              FROM documents)
-        GROUP BY w),
-      fof AS MATERIALIZED (
-        SELECT c AS r, CAST(COUNT(*) AS BIGINT) AS n_r
-        FROM cnt GROUP BY c),
+    "x151_good_turing" -> s"""
+      WITH $wordCountCte,
+      $fofCte,
       tot AS (SELECT CAST(SUM(r * n_r) AS BIGINT) AS n FROM fof),
       wz AS (SELECT r, n_r FROM fof
         UNION ALL SELECT CAST(0 AS BIGINT), CAST(0 AS BIGINT))
@@ -1857,53 +1935,14 @@ object TrainingDataLm {
         "('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % 100 < 90"
       val hoWhere =
         "('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % 100 >= 90"
-      val segB = new StringBuilder
-      segB ++= """hb0 AS MATERIALIZED (SELECT w, CAST(0 AS BIGINT) AS f,
-          list_transform(range(1, length(w)+1), i ->
-            substring(w, CAST(i AS INT), 1)) AS syms
-          FROM (SELECT w FROM hw))"""
-      for (k <- 1 to bpeK)
-        segB ++= s""",
-        hb$k AS MATERIALIZED (${bpeApplySql(s"hb${k - 1}, m$k m")})"""
-      val segY = new StringBuilder
-      segY ++= """hy0 AS MATERIALIZED (SELECT w, CAST(0 AS BIGINT) AS f,
-          list_transform(range(1, length(w)+1), i ->
-            substring(w, CAST(i AS INT), 1)) AS syms
-          FROM (SELECT w FROM hw))"""
-      for (k <- 1 to bpeK)
-        segY ++= s""",
-        hy$k AS MATERIALIZED (${bpeApplySql(s"hy${k - 1}, ym$k m")})"""
-      val dp = new StringBuilder
-      for (i <- 1 to 16) {
-        val cands = (math.max(0, i - 4) until i).map { j =>
-          val k = j * 4 + (i - j)
-          (s"s$j + scl[$k]", s"e$j + scl[$k] * 32 - 1")
-        }
-        def mx(cs: Seq[String]) =
-          if (cs.size == 1) cs.head else cs.mkString("GREATEST(", ", ", ")")
-        dp ++= s""",
-      hd$i AS MATERIALIZED (SELECT *, ${mx(cands.map(_._1))} AS s$i,
-        ${mx(cands.map(_._2))} AS e$i FROM hd${i - 1})"""
-      }
-      val sList = (1 to 16).map(i => s"s$i").mkString("[", ", ", "]")
-      val eList = (1 to 16).map(i => s"e$i").mkString("[", ", ", "]")
+      val (sList, eList) = (viterbiList("s"), viterbiList("e"))
       s"""WITH ${bpeWfCte(trainWhere, 1024)},
       $bpeIterCtes,
       $wpIterCtes,
-      hw AS MATERIALIZED (
-        SELECT w, CAST(COUNT(*) AS BIGINT) AS f
-        FROM (SELECT unnest(regexp_split_to_array(trim(lower(text)), '\\s+'))
-            AS w
-          FROM documents WHERE $hoWhere)
-        WHERE w <> '' AND length(w) <= 16 GROUP BY w),
-      $segB,
-      $segY,
-      twf AS MATERIALIZED (
-        SELECT w, CAST(COUNT(*) AS BIGINT) AS f
-        FROM (SELECT unnest(regexp_split_to_array(trim(lower(text)), '\\s+'))
-            AS w
-          FROM documents WHERE $trainWhere)
-        WHERE w <> '' AND length(w) <= 16 GROUP BY w),
+      ${shortWordsCte("hw", s"documents WHERE $hoWhere")},
+      ${bpeApplyCtes("hb", "SELECT w FROM hw", "m")},
+      ${bpeApplyCtes("hy", "SELECT w FROM hw", "ym")},
+      ${shortWordsCte("twf", s"documents WHERE $trainWhere")},
       tcand AS MATERIALIZED (
         SELECT w, f, (j * 4 + l) AS k, substring(w, CAST(j + 1 AS INT),
           CAST(l AS INT)) AS p
@@ -1933,7 +1972,7 @@ object TrainingDataLm {
         GROUP BY ww.w),
       hd0 AS (SELECT w, scl, CAST(0 AS BIGINT) AS s0, CAST(0 AS BIGINT) AS e0
         FROM hscl)
-      $dp,
+      ${viterbiDpCtes("hd")},
       udict AS (SELECT w,
           32 * ($sList[length(w)]) - ($eList[length(w)]) AS np
         FROM hd16),
@@ -2080,12 +2119,7 @@ object TrainingDataLm {
             AS BIGINT) AS sq
         FROM c${chain}cnt, (SELECT CAST(SUM(cnt) AS BIGINT) AS t
           FROM c${chain}cnt) tt)"""
-      s"""WITH wf AS MATERIALIZED (
-        SELECT w, CAST(COUNT(*) AS BIGINT) AS f
-        FROM (SELECT unnest(regexp_split_to_array(trim(lower(text)), '\\s+'))
-            AS w
-          FROM documents)
-        WHERE w <> '' AND length(w) <= 16 GROUP BY w),
+      s"""WITH ${shortWordsCte("wf", "documents")},
       uwords AS MATERIALIZED (SELECT DISTINCT w FROM wf),
       ucand AS MATERIALIZED (
         SELECT w, (j * 4 + l) AS k, substring(w, CAST(j + 1 AS INT),
@@ -2115,12 +2149,7 @@ object TrainingDataLm {
         FROM upv, (SELECT CAST(SUM(cnt) AS BIGINT) AS t FROM upv) tt),
       unv AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_vocab FROM upv)
       ${decodeSql(3, "upscs")},
-      usw AS MATERIALIZED (
-        SELECT source, w, CAST(COUNT(*) AS BIGINT) AS f
-        FROM (SELECT source,
-            unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS w
-          FROM documents)
-        WHERE w <> '' AND length(w) <= 16 GROUP BY source, w)
+      ${shortSourceWordsCte("usw")}
       SELECT sw.source, CAST(SUM(sw.f) AS BIGINT) AS n_words,
         CAST(SUM(sw.f * d.np) AS BIGINT) AS n_pieces,
         CAST(((2 * SUM(sw.f * d.np) * 10000 + SUM(sw.f))
@@ -2132,32 +2161,9 @@ object TrainingDataLm {
       GROUP BY sw.source, unv.n_vocab ORDER BY sw.source"""
     },
     "x117_unigram_viterbi" -> {
-      val dp = new StringBuilder
-      for (i <- 1 to 16) {
-        val cands = (math.max(0, i - 4) until i).map { j =>
-          val k = j * 4 + (i - j)
-          (s"s$j + scl[$k]", s"e$j + scl[$k] * 32 - 1")
-        }
-        def mx(cs: Seq[String]) =
-          if (cs.size == 1) cs.head else cs.mkString("GREATEST(", ", ", ")")
-        dp ++= s""",
-      d$i AS MATERIALIZED (SELECT *, ${mx(cands.map(_._1))} AS s$i,
-        ${mx(cands.map(_._2))} AS e$i FROM d${i - 1})"""
-      }
-      val sList = (1 to 16).map(i => s"s$i").mkString("[", ", ", "]")
-      val eList = (1 to 16).map(i => s"e$i").mkString("[", ", ", "]")
-      s"""WITH wf AS MATERIALIZED (
-        SELECT w, CAST(COUNT(*) AS BIGINT) AS f
-        FROM (SELECT unnest(regexp_split_to_array(trim(lower(text)), '\\s+'))
-            AS w
-          FROM documents)
-        WHERE w <> '' AND length(w) <= 16 GROUP BY w),
-      sw AS MATERIALIZED (
-        SELECT source, w, CAST(COUNT(*) AS BIGINT) AS f
-        FROM (SELECT source,
-            unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS w
-          FROM documents)
-        WHERE w <> '' AND length(w) <= 16 GROUP BY source, w),
+      val (sList, eList) = (viterbiList("s"), viterbiList("e"))
+      s"""WITH ${shortWordsCte("wf", "documents")},
+      ${shortSourceWordsCte("sw")},
       cand AS MATERIALIZED (
         SELECT w, f, (j * 4 + l) AS k, substring(w, CAST(j + 1 AS INT),
           CAST(l AS INT)) AS p
@@ -2181,7 +2187,7 @@ object TrainingDataLm {
         GROUP BY ww.w),
       d0 AS (SELECT w, scl, CAST(0 AS BIGINT) AS s0, CAST(0 AS BIGINT) AS e0
         FROM sclt)
-      $dp,
+      ${viterbiDpCtes("d")},
       dict AS (SELECT w, $sList[length(w)] AS wq,
           32 * ($sList[length(w)]) - ($eList[length(w)]) AS np
         FROM d16)
@@ -2203,14 +2209,9 @@ object TrainingDataLm {
           CAST(((2 * SUM(sw.f * n.n_sub) * 10000 + SUM(sw.f))
             // (2 * SUM(sw.f))) AS DOUBLE) / 1e4 AS fertility
         FROM sw JOIN nsub n USING (w) GROUP BY sw.source ORDER BY sw.source""",
-    "x155_sgt_smoothing" -> """
-      WITH cnt AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c
-        FROM (SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS w
-              FROM documents)
-        GROUP BY w),
-      fof AS MATERIALIZED (
-        SELECT c AS r, CAST(COUNT(*) AS BIGINT) AS n_r
-        FROM cnt GROUP BY c),
+    "x155_sgt_smoothing" -> s"""
+      WITH $wordCountCte,
+      $fofCte,
       tot AS (SELECT CAST(SUM(r * n_r) AS BIGINT) AS n,
           CAST(COALESCE(SUM(CASE WHEN r = 1 THEN n_r END), 0) AS BIGINT)
             AS n1
@@ -2225,16 +2226,9 @@ object TrainingDataLm {
           CAST(ROUND(LN(2 * CAST(n_r AS DOUBLE) / CAST(t - q AS DOUBLE))
             * 1e6, 0) AS BIGINT) AS ly
         FROM zt),
-      sums AS (SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-          CAST(SUM(lx) AS HUGEINT) AS sx, CAST(SUM(ly) AS HUGEINT) AS sy,
-          CAST(SUM(CAST(lx AS HUGEINT) * ly) AS HUGEINT) AS sxy,
-          CAST(SUM(CAST(lx AS HUGEINT) * lx) AS HUGEINT) AS sxx
-        FROM pts),
+      $fitSumsCte,
       ft AS (SELECT
-          (CASE WHEN n * sxy - sx * sy < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(n * sxy - sx * sy) * 1000000
-              + (n * sxx - sx * sx)) // (2 * (n * sxx - sx * sx)))
-            AS slope_q
+          $fitSlopeSql
         FROM sums),
       est AS (SELECT z.r, z.n_r,
           CASE WHEN nx.nn IS NOT NULL THEN
@@ -2281,22 +2275,7 @@ object TrainingDataLm {
           CAST(ROUND(LN(CAST(cum_types AS DOUBLE)) * 1e6, 0) AS BIGINT)
             AS ly
         FROM curve),
-      sums AS (SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-          CAST(SUM(lx) AS HUGEINT) AS sx, CAST(SUM(ly) AS HUGEINT) AS sy,
-          CAST(SUM(CAST(lx AS HUGEINT) * ly) AS HUGEINT) AS sxy,
-          CAST(SUM(CAST(lx AS HUGEINT) * lx) AS HUGEINT) AS sxx
-        FROM pts),
-      ft AS (SELECT n, sx, sy,
-          (CASE WHEN n * sxy - sx * sy < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(n * sxy - sx * sy) * 1000000
-              + (n * sxx - sx * sx)) // (2 * (n * sxx - sx * sx)))
-            AS slope_q
-        FROM sums),
-      ft2 AS (SELECT n, slope_q,
-          (CASE WHEN sy * 1000000 - slope_q * sx < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(sy * 1000000 - slope_q * sx) + n * 1000000)
-              // (2 * n * 1000000)) AS a_q
-        FROM ft),
+      $fitLineCtes,
       pr AS (SELECT CAST(ROUND(LN(CAST(10 * MAX(cum_tok) AS DOUBLE))
           * 1e6, 0) AS HUGEINT) AS lx10 FROM curve)
       SELECT CAST(n AS BIGINT) AS n_points,
@@ -2306,11 +2285,8 @@ object TrainingDataLm {
             ELSE 1 END) * ((2 * abs(slope_q * lx10) + 1000000)
             // 2000000) AS DOUBLE) / 1e6), 2) AS v_pred_10x
       FROM ft2, pr""",
-    "x154_zipf_fit" -> """
-      WITH cnt AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c
-        FROM (SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS w
-              FROM documents)
-        GROUP BY w),
+    "x154_zipf_fit" -> s"""
+      WITH $wordCountCte,
       top AS (SELECT c, rk FROM (
           SELECT c, ROW_NUMBER() OVER (ORDER BY c DESC, w) AS rk
           FROM cnt)
@@ -2319,22 +2295,7 @@ object TrainingDataLm {
           CAST(ROUND(LN(CAST(rk AS DOUBLE)) * 1e6, 0) AS BIGINT) AS lx,
           CAST(ROUND(LN(CAST(c AS DOUBLE)) * 1e6, 0) AS BIGINT) AS ly
         FROM top),
-      sums AS (SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-          CAST(SUM(lx) AS HUGEINT) AS sx, CAST(SUM(ly) AS HUGEINT) AS sy,
-          CAST(SUM(CAST(lx AS HUGEINT) * ly) AS HUGEINT) AS sxy,
-          CAST(SUM(CAST(lx AS HUGEINT) * lx) AS HUGEINT) AS sxx
-        FROM pts),
-      ft AS (SELECT n, sx, sy,
-          (CASE WHEN n * sxy - sx * sy < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(n * sxy - sx * sy) * 1000000
-              + (n * sxx - sx * sx)) // (2 * (n * sxx - sx * sx)))
-            AS slope_q
-        FROM sums),
-      ft2 AS (SELECT n, slope_q,
-          (CASE WHEN sy * 1000000 - slope_q * sx < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(sy * 1000000 - slope_q * sx) + n * 1000000)
-              // (2 * n * 1000000)) AS a_q
-        FROM ft),
+      $fitLineCtes,
       res AS (SELECT p.ly,
           f.a_q + (CASE WHEN f.slope_q * p.lx < 0 THEN -1 ELSE 1 END)
             * ((2 * abs(f.slope_q * p.lx) + 1000000) // 2000000) AS pred

@@ -1423,36 +1423,10 @@ object TrainingDataMixture {
             * ((2 * abs(sum_red_sel) + n_sel) // (2 * n_sel)) AS DOUBLE)
             / 1e4 END AS mean_red_sel
       FROM ag ORDER BY source""",
-    "x143_vendi_diversity" -> {
-      // x65/x99b's power-iteration + deflation chains over the 10×10
-      // label-centroid Gram (mat0) — structure copied verbatim from
-      // opqRotationCtes so driver and oracle run the same approximation
-      val eig = new StringBuilder
-      for (c <- 0 until 10) eig ++= s""",
-      it$c(k, v) AS (
-        SELECT 0, list_transform(m[1], x -> CAST(1.0 AS DOUBLE)) FROM mat$c
-        UNION ALL
-        SELECT k + 1, list_transform(w, x ->
-            x / list_max(list_transform(w, y -> abs(y))))
-        FROM (SELECT k, list_transform(range(1, len(m) + 1), i ->
-            list_sum(list_transform(list_zip(m[i], v), p -> p[1] * p[2]))) AS w
-          FROM it$c, mat$c WHERE k < 50)),
-      uvec$c AS MATERIALIZED (SELECT list_transform(v, x ->
-          x / sqrt(list_sum(list_transform(v, y -> y * y)))) AS u
-        FROM it$c WHERE k = 50),
-      lamt$c AS MATERIALIZED (SELECT
-          list_sum(list_transform(list_zip(u, w), p -> p[1] * p[2])) AS lam
-        FROM (SELECT u, list_transform(range(1, len(m) + 1), i ->
-            list_sum(list_transform(list_zip(m[i], u), p -> p[1] * p[2]))) AS w
-          FROM uvec$c, mat$c)),
-      mat${c + 1} AS MATERIALIZED (
-        SELECT list_transform(range(1, len(m) + 1), i ->
-            list_transform(range(1, len(m) + 1), j ->
-              m[i][j] - lam * u[i] * u[j])) AS m
-        FROM mat$c, uvec$c, lamt$c)"""
-      val lamUnion = (0 until 10).map(c =>
-        s"SELECT $c AS c, (SELECT lam FROM lamt$c) AS lam FROM uvec$c")
-        .mkString(" UNION ALL ")
+    "x143_vendi_diversity" ->
+      // x65/x99b's power-iteration + deflation chain over the 10×10
+      // label-centroid Gram (mat0), so driver and oracle run the same
+      // approximation
       s"""WITH RECURSIVE d1 AS (SELECT label,
           unnest(range(0, len(embedding))) AS pos,
           unnest(embedding) AS v
@@ -1475,8 +1449,7 @@ object TrainingDataMixture {
         FROM nr a, nr b, mc),
       kr AS (SELECT li, list(kvv ORDER BY lj) AS krow FROM kv GROUP BY li),
       mat0 AS MATERIALIZED (SELECT list(krow ORDER BY li) AS m FROM kr)
-      $eig,
-      lams AS MATERIALIZED ($lamUnion),
+      ${eigenCtes(10)},
       ll AS (SELECT list(GREATEST(lam, CAST(0 AS DOUBLE)) ORDER BY c) AS ls
         FROM lams),
       hs AS (SELECT CAST(list_sum(list_transform(ls, l ->
@@ -1489,8 +1462,7 @@ object TrainingDataMixture {
         ROUND(exp(CAST(h6 AS DOUBLE) / 1e6) * 1e4) / 1e4 AS vendi,
         ROUND(exp(CAST(h6 AS DOUBLE) / 1e6) / mc.m * 1e4) / 1e4
           AS vendi_ratio
-      FROM hs, mc"""
-    },
+      FROM hs, mc""",
     "x141_unimax_alloc" -> """
       WITH caps AS (SELECT source,
           CAST(SUM(len(regexp_split_to_array(trim(text), '\s+')))
@@ -1634,18 +1606,11 @@ object TrainingDataMixture {
         CAST(fq AS DOUBLE) / 1e6 AS weight
       FROM exc e JOIN fin USING (source) ORDER BY e.source"""
     },
-    "x162_neyman_alloc" -> """
-      WITH q AS (SELECT source, CAST(ROUND(ROUND(
-          LEAST(len(toks) / 50.0, 1.0) * 0.4
-          + (1.0 - LEAST(CAST(length(text) - length(regexp_replace(text,
-                '[^A-Za-z0-9\s]', '', 'g')) AS DOUBLE)
-              / GREATEST(length(text), 1) * 5.0, 1.0)) * 0.3
-          + LEAST(CAST(len(list_filter(toks,
-                t -> t IN ('the', 'a', 'of', 'and'))) AS DOUBLE)
-              / GREATEST(len(toks), 1) * 10.0, 1.0) * 0.3, 4) * 1e4, 0)
+    "x162_neyman_alloc" -> s"""
+      WITH q AS (SELECT source, CAST(ROUND($qualityRoundSql * 1e4, 0)
           AS BIGINT) AS q4
         FROM (SELECT source, text,
-            regexp_split_to_array(trim(text), '\s+') AS toks
+            regexp_split_to_array(trim(text), '\\s+') AS toks
           FROM documents)),
       st AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n,
           CAST(SUM(q4) AS BIGINT) AS sq,
@@ -2044,19 +2009,10 @@ object TrainingDataMixture {
         (CAST(h AS DOUBLE) / 4294967296.0) < (quality * quality) AS selected
       FROM (
         SELECT doc_id, source,
-          ROUND(LEAST(n_tok / 50.0, 1.0) * 0.4
-            + (1.0 - LEAST(punct_ratio * 5.0, 1.0)) * 0.3
-            + LEAST(stop_ratio * 10.0, 1.0) * 0.3, 4) AS quality,
+          $qualityMixSql AS quality,
           ${md5Hash32Sql("CAST(doc_id AS VARCHAR)")} AS h
         FROM (
-          SELECT doc_id, source, len(toks) AS n_tok,
-            CAST(length(text) - length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g'))
-              AS DOUBLE) / GREATEST(length(text), 1) AS punct_ratio,
-            CAST(len(list_filter(toks, t -> t IN ('the','a','of','and'))) AS DOUBLE)
-              / GREATEST(len(toks), 1) AS stop_ratio
-          FROM (SELECT doc_id, source, text,
-                  regexp_split_to_array(trim(text), '\\s+') AS toks
-                FROM documents)))
+          ${qualityRatiosSql("doc_id, source", "documents")}))
       ORDER BY doc_id""",
     "x27_domain_mixture" -> """
       WITH d AS (
@@ -2131,13 +2087,7 @@ object TrainingDataMixture {
       wl AS (SELECT c.doc_id, c.text, d.lang
              FROM corpus c JOIN documents d ON c.doc_id % 1000000 = d.doc_id),
       s1 AS (SELECT * FROM wl WHERE lang = 'en'),
-      qual AS (SELECT doc_id, text, ROUND(
-          LEAST(len(toks) / 50.0, 1.0) * 0.4
-          + (1.0 - LEAST(CAST(length(text) - length(
-                regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)
-              / GREATEST(length(text), 1) * 5.0, 1.0)) * 0.3
-          + LEAST(CAST(len(list_filter(toks, t -> t IN ('the','a','of','and')))
-              AS DOUBLE) / GREATEST(len(toks), 1) * 10.0, 1.0) * 0.3, 4) AS q
+      qual AS (SELECT doc_id, text, $qualityRoundSql AS q
         FROM (SELECT doc_id, text,
                 regexp_split_to_array(trim(text), '\\s+') AS toks FROM s1)),
       s2 AS (SELECT * FROM qual WHERE q >= 0.5),
@@ -2175,13 +2125,7 @@ object TrainingDataMixture {
       WITH corpus AS (SELECT doc_id, text FROM $corpusSql),
       wl AS (SELECT c.doc_id, c.text, d.lang, d.source
              FROM corpus c JOIN documents d ON c.doc_id % 1000000 = d.doc_id),
-      qual AS (SELECT doc_id, source, lang, text, ROUND(
-          LEAST(len(toks) / 50.0, 1.0) * 0.4
-          + (1.0 - LEAST(CAST(length(text) - length(
-                regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)
-              / GREATEST(length(text), 1) * 5.0, 1.0)) * 0.3
-          + LEAST(CAST(len(list_filter(toks, t -> t IN ('the','a','of','and')))
-              AS DOUBLE) / GREATEST(len(toks), 1) * 10.0, 1.0) * 0.3, 4) AS q
+      qual AS (SELECT doc_id, source, lang, text, $qualityRoundSql AS q
         FROM (SELECT doc_id, source, lang, text,
                 regexp_split_to_array(trim(text), '\\s+') AS toks FROM wl))
       SELECT source,

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Store, Tables}
+import graft.core.{Pin, Store, Tables}
 import graft.text.TextFunctions._
 import graft.queries.TrainingData._
 
@@ -500,12 +500,8 @@ object TrainingDataQuality {
     // four times below and a DataFrame re-executes its plan per
     // reference — pinning makes this ONE corpus scan, and the final
     // plan reads only local relations (plan-asserted)
-    val cnts = {
-      val c = Tables.documents(s, d)
-        .groupBy(col("source"), col("lang")).agg(count(lit(1)).as("c"))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(c.collect().toSeq.asJava, c.schema)
-    }
+    val cnts = Pin(Tables.documents(s, d)
+      .groupBy(col("source"), col("lang")).agg(count(lit(1)).as("c")))
     val srcTot = cnts.groupBy(col("source")).agg(sum(col("c")).as("ns"))
     val langTot = cnts.groupBy(col("lang")).agg(sum(col("c")).as("cq"))
     val tot = cnts.agg(sum(col("c")).as("n"))
@@ -1441,22 +1437,12 @@ object TrainingDataQuality {
 
   /** Shared by x32 (compute-at-query) and x32b (staged-at-ingest):
     * the two paths must be bit-identical, so one oracle serves both. */
-  private val x32OracleSql = """
+  private val x32OracleSql = s"""
       WITH scored AS (
         SELECT doc_id, source,
-          ROUND(LEAST(n_tok / 50.0, 1.0) * 0.4
-            + (1.0 - LEAST(punct_ratio * 5.0, 1.0)) * 0.3
-            + LEAST(stop_ratio * 10.0, 1.0) * 0.3, 4) AS quality
+          $qualityMixSql AS quality
         FROM (
-          SELECT doc_id, source,
-            len(toks) AS n_tok,
-            CAST(length(text) - length(regexp_replace(text, '[^A-Za-z0-9\s]', '', 'g'))
-              AS DOUBLE) / GREATEST(length(text), 1) AS punct_ratio,
-            CAST(len(list_filter(toks, t -> t IN ('the','a','of','and'))) AS DOUBLE)
-              / GREATEST(len(toks), 1) AS stop_ratio
-          FROM (SELECT doc_id, source, text,
-                  regexp_split_to_array(trim(text), '\s+') AS toks
-                FROM documents))),
+          ${qualityRatiosSql("doc_id, source", "documents")})),
       hist AS (
         SELECT source, quality, COUNT(*) AS c
         FROM scored GROUP BY source, quality),
@@ -1471,6 +1457,49 @@ object TrainingDataQuality {
       FROM scored s JOIN corte ON s.source = corte.source
       WHERE s.quality > corte.corte
       ORDER BY s.source, s.doc_id"""
+
+  /** [[graft.text.TextFunctions.qualityScore]] over a row's `text`
+    * and `toks`, rounded to 4 places, with the ratios in parentheses
+    * (x68/x80/x82's form; [[TrainingData.qualityRoundSql]] is the
+    * other). */
+  private def qualityScoreSql: String = """ROUND(LEAST(len(toks) / 50.0, 1.0) * 0.4
+            + (1.0 - LEAST((CAST(length(text) - length(regexp_replace(text,
+                  '[^A-Za-z0-9\s]', '', 'g')) AS DOUBLE)
+                / GREATEST(length(text), 1)) * 5.0, 1.0)) * 0.3
+            + LEAST((CAST(len(list_filter(toks,
+                  t -> t IN ('the','a','of','and'))) AS DOUBLE)
+                / GREATEST(len(toks), 1)) * 10.0, 1.0) * 0.3, 4)"""
+
+  /** [[packSegments]] in DuckDB: `d` (non-empty docs with token count
+    * and md5 sub-shard), `o` (each doc's start offset in its
+    * (source, sub_shard) stream) and `e`, one row per 256-token
+    * sequence a doc touches. */
+  private def packSegmentCtes: String = """d AS (
+        SELECT doc_id, source,
+          CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tok,
+          CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % 4
+            AS INT) AS sub_shard
+        FROM documents
+        WHERE len(regexp_split_to_array(trim(text), '\s+')) > 0),
+      o AS (
+        SELECT doc_id, source, sub_shard, n_tok,
+          CAST(SUM(n_tok) OVER (PARTITION BY source, sub_shard ORDER BY doc_id)
+            - n_tok AS BIGINT) AS ini
+        FROM d),
+      e AS (
+        SELECT source, sub_shard, doc_id, ini, n_tok,
+          CAST(unnest(range(ini // 256, (ini + n_tok - 1) // 256 + 1)) AS BIGINT)
+            AS seq_id
+        FROM o)"""
+
+  /** The en/pt/de stopword hits `c_en`, `c_pt` and `c_de` in a row's
+    * lower-cased tokens `tl`. */
+  private def langCountsSql: String = """CAST(len(list_filter(tl, x -> x IN ('the', 'a', 'and', 'of')))
+            AS BIGINT) AS c_en,
+          CAST(len(list_filter(tl, x -> x IN ('de', 'o', 'da', 'em')))
+            AS BIGINT) AS c_pt,
+          CAST(len(list_filter(tl, x -> x IN ('der', 'die', 'das', 'und')))
+            AS BIGINT) AS c_de"""
 
   val oracles: Map[String, String] = Map(
     "x144_filter_attribution" -> """
@@ -1625,17 +1654,11 @@ object TrainingDataQuality {
       SELECT w, df, cf, CAST(mq AS DOUBLE) / 1e4 AS mean_per_doc,
         CAST(fano_q AS DOUBLE) / 1e4 AS fano
       FROM top ORDER BY fano DESC, w""",
-    "x82_quality_percentile" -> """
+    "x82_quality_percentile" -> s"""
       WITH q AS (SELECT doc_id, source,
-          ROUND(LEAST(len(toks) / 50.0, 1.0) * 0.4
-            + (1.0 - LEAST((CAST(length(text) - length(regexp_replace(text,
-                  '[^A-Za-z0-9\s]', '', 'g')) AS DOUBLE)
-                / GREATEST(length(text), 1)) * 5.0, 1.0)) * 0.3
-            + LEAST((CAST(len(list_filter(toks,
-                  t -> t IN ('the','a','of','and'))) AS DOUBLE)
-                / GREATEST(len(toks), 1)) * 10.0, 1.0) * 0.3, 4) AS quality
+          $qualityScoreSql AS quality
         FROM (SELECT doc_id, source, text,
-                regexp_split_to_array(trim(text), '\s+') AS toks
+                regexp_split_to_array(trim(text), '\\s+') AS toks
               FROM documents))
       SELECT doc_id, source, quality,
         PERCENT_RANK() OVER (PARTITION BY source ORDER BY quality)
@@ -1685,18 +1708,12 @@ object TrainingDataQuality {
         e.lang_entropy_bits, b.content_checksum
       FROM base b JOIN ent e ON b.source = e.source
       ORDER BY b.source""",
-    "x80_quality_trend" -> """
+    "x80_quality_trend" -> s"""
       WITH q AS (SELECT source, doc_id AS x,
-          CAST(ROUND(ROUND(LEAST(len(toks) / 50.0, 1.0) * 0.4
-            + (1.0 - LEAST((CAST(length(text) - length(regexp_replace(text,
-                  '[^A-Za-z0-9\s]', '', 'g')) AS DOUBLE)
-                / GREATEST(length(text), 1)) * 5.0, 1.0)) * 0.3
-            + LEAST((CAST(len(list_filter(toks,
-                  t -> t IN ('the','a','of','and'))) AS DOUBLE)
-                / GREATEST(len(toks), 1)) * 10.0, 1.0) * 0.3, 4) * 1e4, 0)
+          CAST(ROUND($qualityScoreSql * 1e4, 0)
             AS BIGINT) AS q4
         FROM (SELECT source, doc_id, text,
-                regexp_split_to_array(trim(text), '\s+') AS toks
+                regexp_split_to_array(trim(text), '\\s+') AS toks
               FROM documents)),
       m AS (SELECT source, COUNT(*) AS n, SUM(x) AS sx,
           SUM(x * x) AS sxx, SUM(q4) AS sy, SUM(x * q4) AS sxy
@@ -1739,18 +1756,13 @@ object TrainingDataQuality {
           AND ns * 10 <= nw
           AND nst >= 2) AS passes
       FROM c ORDER BY doc_id""",
-    "x79_lang_margin" -> """
+    "x79_lang_margin" -> s"""
       WITH t AS (SELECT doc_id,
-          regexp_split_to_array(trim(text), '\s+') AS toks,
-          regexp_split_to_array(trim(lower(text)), '\s+') AS tl
+          regexp_split_to_array(trim(text), '\\s+') AS toks,
+          regexp_split_to_array(trim(lower(text)), '\\s+') AS tl
         FROM documents),
       c AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n,
-          CAST(len(list_filter(tl, x -> x IN ('the', 'a', 'and', 'of')))
-            AS BIGINT) AS c_en,
-          CAST(len(list_filter(tl, x -> x IN ('de', 'o', 'da', 'em')))
-            AS BIGINT) AS c_pt,
-          CAST(len(list_filter(tl, x -> x IN ('der', 'die', 'das', 'und')))
-            AS BIGINT) AS c_de
+          $langCountsSql
         FROM t),
       m AS (SELECT doc_id, GREATEST(n, 1) AS nw, c_en, c_pt, c_de,
           GREATEST(c_en, c_pt, c_de) AS best,
@@ -1775,15 +1787,8 @@ object TrainingDataQuality {
           unnest(regexp_split_to_array(trim(text), '\s+')) AS w
         FROM documents)
       GROUP BY source ORDER BY source""",
-    "x66_boilerplate_segments" -> """
-      WITH t AS (SELECT doc_id,
-          regexp_split_to_array(trim('portal ' || source
-            || ' official mirror terms of service apply'
-            || ' all rights reserved contact webmaster ' || text),
-            '\s+') AS toks
-        FROM documents),
-      b AS (SELECT doc_id, toks,
-          unnest(range(0, (len(toks) + 7) // 8)) AS g FROM t),
+    "x66_boilerplate_segments" -> s"""
+      WITH $boilerBlocksCtes,
       seg AS (SELECT doc_id,
           md5(array_to_string(list_slice(toks, g * 8 + 1, g * 8 + 8), ' '))
             AS fp
@@ -1797,18 +1802,12 @@ object TrainingDataQuality {
         CAST((2 * n_boiler * 10000 + n_seg) // (2 * n_seg) AS DOUBLE) / 1e4
           AS boiler_frac
       FROM agg ORDER BY doc_id""",
-    "x68_quality_psi" -> """
+    "x68_quality_psi" -> s"""
       WITH sp AS (SELECT (MAX(doc_id) + 1) // 2 AS split FROM documents),
       qual AS (SELECT doc_id,
-          ROUND(LEAST(len(toks) / 50.0, 1.0) * 0.4
-            + (1.0 - LEAST((CAST(length(text) - length(regexp_replace(text,
-                  '[^A-Za-z0-9\s]', '', 'g')) AS DOUBLE)
-                / GREATEST(length(text), 1)) * 5.0, 1.0)) * 0.3
-            + LEAST((CAST(len(list_filter(toks,
-                  t -> t IN ('the','a','of','and'))) AS DOUBLE)
-                / GREATEST(len(toks), 1)) * 10.0, 1.0) * 0.3, 4) AS quality
+          $qualityScoreSql AS quality
         FROM (SELECT doc_id, text,
-                regexp_split_to_array(trim(text), '\s+') AS toks
+                regexp_split_to_array(trim(text), '\\s+') AS toks
               FROM documents)),
       binned AS (SELECT
           LEAST(CAST(ROUND(quality * 1e4, 0) AS BIGINT) // 1000, 9) AS bin,
@@ -1839,19 +1838,9 @@ object TrainingDataQuality {
         SELECT source, CAST(ROUND(quality * 1e4, 0) AS BIGINT) AS q4
         FROM (
           SELECT source,
-            ROUND(LEAST(n_tok / 50.0, 1.0) * 0.4
-              + (1.0 - LEAST(punct_ratio * 5.0, 1.0)) * 0.3
-              + LEAST(stop_ratio * 10.0, 1.0) * 0.3, 4) AS quality
+            $qualityMixSql AS quality
           FROM (
-            SELECT source, len(toks) AS n_tok,
-              CAST(length(text) - length(regexp_replace(text,
-                  '[^A-Za-z0-9\\s]', '', 'g'))
-                AS DOUBLE) / GREATEST(length(text), 1) AS punct_ratio,
-              CAST(len(list_filter(toks, t -> t IN ('the','a','of','and')))
-                AS DOUBLE) / GREATEST(len(toks), 1) AS stop_ratio
-            FROM (SELECT source, text,
-                    regexp_split_to_array(trim(text), '\\s+') AS toks
-                  FROM documents)))),
+            ${qualityRatiosSql("source", "documents")}))),
       h1 AS (SELECT source, q4, CAST(COUNT(*) AS BIGINT) AS cnt
         FROM q GROUP BY 1, 2),
       t1 AS (SELECT source, CAST(SUM(cnt) AS BIGINT) AS n
@@ -1901,7 +1890,7 @@ object TrainingDataQuality {
         FROM bv
         UNION ALL SELECT vec_id + 2000000, s0 FROM bv),
       corpus AS (
-        SELECT doc_id, text FROM $corpusSql WHERE doc_id % 1000000 < 200),
+        $sliverCorpusSql),
       fam AS (SELECT md5(c.text) AS fp, c.doc_id, p.vfp
         FROM corpus c JOIN paired p USING (doc_id))
       SELECT MIN(doc_id) AS family_id, CAST(COUNT(*) AS BIGINT) AS n_members,
@@ -1977,24 +1966,8 @@ object TrainingDataQuality {
         md5(array_to_string(list_slice(toks, chunk_id * 96 + 1,
           chunk_id * 96 + LEAST(n_tok - chunk_id * 96, 128)), ' ')) AS fp
       FROM ch ORDER BY doc_id, chunk_id""",
-    "x25_pack_sequences" -> """
-      WITH d AS (
-        SELECT doc_id, source,
-          CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tok,
-          CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % 4
-            AS INT) AS sub_shard
-        FROM documents
-        WHERE len(regexp_split_to_array(trim(text), '\s+')) > 0),
-      o AS (
-        SELECT doc_id, source, sub_shard, n_tok,
-          CAST(SUM(n_tok) OVER (PARTITION BY source, sub_shard ORDER BY doc_id)
-            - n_tok AS BIGINT) AS ini
-        FROM d),
-      e AS (
-        SELECT source, sub_shard, doc_id, ini, n_tok,
-          CAST(unnest(range(ini // 256, (ini + n_tok - 1) // 256 + 1)) AS BIGINT)
-            AS seq_id
-        FROM o)
+    "x25_pack_sequences" -> s"""
+      WITH $packSegmentCtes
       SELECT source, sub_shard, seq_id,
         CAST(COUNT(*) AS BIGINT) AS n_docs,
         CAST(SUM(LEAST(ini + n_tok, (seq_id + 1) * 256)
@@ -2003,24 +1976,8 @@ object TrainingDataQuality {
         MAX(doc_id) AS last_doc
       FROM e GROUP BY source, sub_shard, seq_id
       ORDER BY source, sub_shard, seq_id""",
-    "x121_pack_boundary" -> """
-      WITH d AS (
-        SELECT doc_id, source,
-          CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tok,
-          CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % 4
-            AS INT) AS sub_shard
-        FROM documents
-        WHERE len(regexp_split_to_array(trim(text), '\s+')) > 0),
-      o AS (
-        SELECT doc_id, source, sub_shard, n_tok,
-          CAST(SUM(n_tok) OVER (PARTITION BY source, sub_shard ORDER BY doc_id)
-            - n_tok AS BIGINT) AS ini
-        FROM d),
-      e AS (
-        SELECT source, sub_shard, doc_id, ini, n_tok,
-          CAST(unnest(range(ini // 256, (ini + n_tok - 1) // 256 + 1)) AS BIGINT)
-            AS seq_id
-        FROM o),
+    "x121_pack_boundary" -> s"""
+      WITH $packSegmentCtes,
       seqs AS (
         SELECT source, sub_shard, seq_id,
           CAST(COUNT(*) AS BIGINT) AS nd,
@@ -2181,20 +2138,8 @@ object TrainingDataQuality {
         CAST((2 * n * 10000 + n_src) // (2 * n_src) AS DOUBLE) / 1e4
           AS share
       FROM t ORDER BY source, bucket""",
-    "x87_boilerplate_strip" -> """
-      WITH t AS (SELECT doc_id,
-          regexp_split_to_array(trim('portal ' || source
-            || ' official mirror terms of service apply'
-            || ' all rights reserved contact webmaster ' || text),
-            '\s+') AS toks
-        FROM documents),
-      b AS (SELECT doc_id, toks,
-          unnest(range(0, (len(toks) + 7) // 8)) AS g FROM t),
-      seg AS (SELECT doc_id, g,
-          array_to_string(list_slice(toks, g * 8 + 1, g * 8 + 8), ' ')
-            AS segtxt
-        FROM b),
-      sf AS (SELECT doc_id, g, segtxt, md5(segtxt) AS fp FROM seg),
+    "x87_boilerplate_strip" -> s"""
+      WITH $boilerSegmentCtes,
       df AS (SELECT fp, COUNT(DISTINCT doc_id) AS df FROM sf GROUP BY fp),
       agg AS (SELECT doc_id, COUNT(*) AS n_seg,
           SUM(CASE WHEN df >= 3 THEN 1 ELSE 0 END) AS n_drop,
@@ -2204,21 +2149,13 @@ object TrainingDataQuality {
         FROM sf JOIN df USING (fp) GROUP BY doc_id)
       SELECT doc_id, CAST(n_seg AS BIGINT) AS n_seg,
         CAST(n_drop AS BIGINT) AS n_drop,
-        md5(clean) AS clean_md5,
-        CASE WHEN length(clean) = 0 THEN CAST(0 AS BIGINT)
-          ELSE CAST(len(regexp_split_to_array(clean, '\s+')) AS BIGINT) END
-          AS clean_n_tok
+        $cleanStatsSql
       FROM agg ORDER BY doc_id""",
-    "x89_lang_confusion" -> """
+    "x89_lang_confusion" -> s"""
       WITH c AS (SELECT doc_id, lang,
-          CAST(len(list_filter(tl, x -> x IN ('the', 'a', 'and', 'of')))
-            AS BIGINT) AS c_en,
-          CAST(len(list_filter(tl, x -> x IN ('de', 'o', 'da', 'em')))
-            AS BIGINT) AS c_pt,
-          CAST(len(list_filter(tl, x -> x IN ('der', 'die', 'das', 'und')))
-            AS BIGINT) AS c_de
+          $langCountsSql
         FROM (SELECT doc_id, lang,
-            regexp_split_to_array(trim(lower(text)), '\s+') AS tl
+            regexp_split_to_array(trim(lower(text)), '\\s+') AS tl
           FROM documents)),
       r AS (SELECT lang,
           CASE WHEN c_en = GREATEST(c_en, c_pt, c_de) AND c_en > 0 THEN 'en'
@@ -2324,23 +2261,13 @@ object TrainingDataQuality {
       SELECT doc_id, token, tf, df, score, CAST(rk AS INT) AS rk
       FROM ranked WHERE rk <= 3
       ORDER BY doc_id, rk""",
-    "x8_quality_score" -> """
+    "x8_quality_score" -> s"""
       SELECT doc_id, CAST(n_tok AS INT) AS n_tok,
         ROUND(punct_ratio, 4) AS punct_ratio,
         ROUND(stop_ratio, 4) AS stop_ratio,
-        ROUND(LEAST(n_tok / 50.0, 1.0) * 0.4
-          + (1.0 - LEAST(punct_ratio * 5.0, 1.0)) * 0.3
-          + LEAST(stop_ratio * 10.0, 1.0) * 0.3, 4) AS quality
+        $qualityMixSql AS quality
       FROM (
-        SELECT doc_id,
-          len(toks) AS n_tok,
-          CAST(length(text) - length(regexp_replace(text, '[^A-Za-z0-9\s]', '', 'g'))
-            AS DOUBLE) / GREATEST(length(text), 1) AS punct_ratio,
-          CAST(len(list_filter(toks, t -> t IN ('the','a','of','and'))) AS DOUBLE)
-            / GREATEST(len(toks), 1) AS stop_ratio
-        FROM (SELECT doc_id, text,
-                regexp_split_to_array(trim(text), '\s+') AS toks
-              FROM documents))
+        ${qualityRatiosSql("doc_id", "documents")})
       ORDER BY doc_id""",
     "x7_lang_id" -> """
       SELECT doc_id,

@@ -273,7 +273,6 @@ object DocStream {
     // dedup on exotic sources (the memory-sink view in the spec hits
     // exactly that).
     val bc = {
-      import scala.jdk.CollectionConverters._
       // Enforce the bin domain at the door (ADVICE r7): the PSI grid
       // is pinned to bins 0–9, but a caller whose binning isn't
       // clamped (e4-style floor bins have no lower clamp; null bins
@@ -283,7 +282,7 @@ object DocStream {
       // HERE keeps n and the contributions consistent: out-of-domain
       // rows are excluded from both, not half-counted.
       val inDomain = binCounts.filter(col("bin").between(0, 9))
-      spark.createDataFrame(inDomain.collect().toSeq.asJava, binCounts.schema)
+      graft.core.Pin(inDomain)
     }
     val full = bc.groupBy(col("window")).agg(sum(col("c")).as("n"))
       .crossJoin(broadcast(grid))

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.VectorExpressions
 
 /** The native expression must be reachable from SQL text — both via
   * session registration and via the SparkSessionExtensions config
@@ -11,7 +10,7 @@ class ExtensionsSpec extends AnyFunSuite {
 
   test("cosine_sim registered on an existing session evaluates in SQL text") {
     val spark = TestSpark.spark
-    VectorExpressions.register(spark)
+    Graft.init(spark)
     val r = spark.sql(
       """SELECT cosine_sim(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)),
                            array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c""")
@@ -58,10 +57,12 @@ class ExtensionsSpec extends AnyFunSuite {
     Graft.init(spark, TestSpark.sf) // idempotent
     val r = spark.sql("""
       SELECT n_name, repair_encoding(n_name) AS fixed,
-        cosine_sim(array(CAST(1.0 AS FLOAT)), array(CAST(1.0 AS FLOAT))) AS c
+        cosine_sim(array(CAST(1.0 AS FLOAT)), array(CAST(1.0 AS FLOAT))) AS c,
+        deflate_ratio(repeat('ab', 500)) AS d
       FROM nation ORDER BY n_nationkey LIMIT 1""").collect()(0)
     assert(r.getString(0) == r.getString(1)) // clean names pass through
     assert(math.abs(r.getDouble(2) - 1.0) < 1e-12)
+    assert(r.getDouble(3) > 0.0 && r.getDouble(3) < 0.1, s"deflate_ratio ${r.getDouble(3)}")
   }
 
   test("deflate_ratio separates repetitive from high-entropy text") {
@@ -88,7 +89,7 @@ class ExtensionsSpec extends AnyFunSuite {
 
   test("cosine_sim rejects non-float-array inputs") {
     val spark = TestSpark.spark
-    VectorExpressions.register(spark)
+    Graft.init(spark)
     val err = intercept[Exception] {
       spark.sql("SELECT cosine_sim(array(1, 2), array(3, 4))").collect()
     }
