@@ -50,23 +50,12 @@ object NearDup {
     * shingle — the verification primitive. Quadratic only within
     * shingle postings, never across the corpus. */
   def ngramJaccardPairs(docs: DataFrame, shingleN: Int = 3,
-      threshold: Double = 0.5): DataFrame = {
-    val sh = docs
-      .select(col("doc_id"), wsTokens(col("text")).as("toks"))
-      .select(col("doc_id"), explode(shinglesOfToks(col("toks"), shingleN)).as("sh"))
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = sh.as("a").join(sh.as("b"), Seq("sh"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col("doc_id").as("id_a"), col("n").as("na")), Seq("id_a"))
-      .join(sizes.select(col("doc_id").as("id_b"), col("n").as("nb")), Seq("id_b"))
+      threshold: Double = 0.5): DataFrame =
+    shingleOverlaps(docs, shingleN)
       .withColumn("jaccard",
         round(col("inter").cast("double") / (col("na") + col("nb") - col("inter")), 4))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
 
   /** Asymmetric n-gram containment pairs: C = |S_A ∩ S_B| /
     * min(|S_A|, |S_B|) — catches quote / expansion / truncation
@@ -78,19 +67,8 @@ object NearDup {
     * [[ngramJaccardPairs]]: quadratic only within shingle postings,
     * never across the corpus. */
   def containmentPairs(docs: DataFrame, shingleN: Int = 3,
-      threshold: Double = 0.9): DataFrame = {
-    val sh = docs
-      .select(col("doc_id"), wsTokens(col("text")).as("toks"))
-      .select(col("doc_id"),
-        explode(shinglesOfToks(col("toks"), shingleN)).as("sh"))
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = sh.as("a").join(sh.as("b"), Seq("sh"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col("doc_id").as("id_a"), col("n").as("na")), Seq("id_a"))
-      .join(sizes.select(col("doc_id").as("id_b"), col("n").as("nb")), Seq("id_b"))
+      threshold: Double = 0.9): DataFrame =
+    shingleOverlaps(docs, shingleN)
       .withColumn("containment",
         round(col("inter").cast("double") / least(col("na"), col("nb")), 4))
       .withColumn("jaccard",
@@ -98,6 +76,21 @@ object NearDup {
           / (col("na") + col("nb") - col("inter")), 4))
       .filter(col("containment") >= threshold)
       .select(col("id_a"), col("id_b"), col("containment"), col("jaccard"))
+
+  /** (id_a, id_b, inter, na, nb): every pair id_a < id_b sharing at
+    * least one distinct `shingleN`-gram, their shared count and both
+    * shingle-set sizes, by an inverted-index self-join on the shingle. */
+  private def shingleOverlaps(docs: DataFrame, shingleN: Int): DataFrame = {
+    val sh = docs
+      .select(col("doc_id"), wsTokens(col("text")).as("toks"))
+      .select(col("doc_id"), explode(shinglesOfToks(col("toks"), shingleN)).as("sh"))
+    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    sh.as("a").join(sh.as("b"), Seq("sh"))
+      .filter(col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+      .agg(count(lit(1)).as("inter"))
+      .join(sizes.select(col("doc_id").as("id_a"), col("n").as("na")), Seq("id_a"))
+      .join(sizes.select(col("doc_id").as("id_b"), col("n").as("nb")), Seq("id_b"))
   }
 
   private[graft] val minhashPrime = 4294967311L // smallest prime > 2^32

@@ -39,16 +39,13 @@ object IvfIndex {
         lit(r.getSeq[Float](1).toArray).as("ce"))
     }.toIndexedSeq: _*)
 
-  /** Nearest-centroid assignment, ROW-LOCAL (optimization r12, guide
-    * §2.4): the argmax over the nCells literal centroids runs inside
-    * each row — array_max over (sim, −cid) picks the same
-    * (6dp-rounded sim DESC, cid ASC) winner the former crossJoin +
-    * groupBy(vec_id) max_by shape picked, and the corpus-sized
-    * exchange (which carried every embedding) is removed outright. */
+  /** Nearest-centroid assignment, ROW-LOCAL: the argmax over the
+    * nCells literal centroids runs inside each row — array_max over
+    * (sim, −cid) picks the (6dp-rounded sim DESC, cid ASC) winner with
+    * no corpus-sized exchange. */
   private[graft] def assign(emb: DataFrame, cents: DataFrame): DataFrame = {
     val rows = cents.select(col("cid"), col("ce")).collect()
-    // empty centroid table (degenerate input): the former crossJoin +
-    // aggregate produced zero rows — preserve that contract
+    // empty centroid table (degenerate input): zero rows
     if (rows.isEmpty)
       return emb.select(col("vec_id"), col("embedding"),
         lit(null).cast(cents.schema("cid").dataType).as("cell"))
@@ -63,10 +60,8 @@ object IvfIndex {
   /** One Lloyd step: row-local assign, then element-wise mean per
     * cell over integer 2^24-scaled components (order-free,
     * engine-exact), quantized back to float. The per-component sums
-    * ride ONE map-side-combinable groupBy(cell) with dim sum columns
-    * (r12) instead of the former posexplode + (cell, pos) shuffle +
-    * second (cell) shuffle — identical integers per (cell, pos), so
-    * the quantized means are bit-identical. */
+    * ride ONE map-side-combinable groupBy(cell) with dim sum
+    * columns. */
   private[graft] def lloydStep(emb: DataFrame, cents: DataFrame): DataFrame = {
     val ceRows = cents.select(col("ce")).head(1)
     if (ceRows.isEmpty)

@@ -37,28 +37,22 @@ import org.apache.spark.sql.functions._
 object Opq {
 
   /** Exact-integer covariance of the embedding column — x65's
-    * recipe: 1e6-quantized coordinates, Gram cells summed in
-    * decimal(38,0) (the 128-bit accumulator — per-row products fit a
-    * Long, but the corpus SUM grows as n·1e12 and would overflow
-    * Int64 past a few thousand rows; ADVICE r9), half-away integer
+    * recipe: 1e6-quantized coordinates, Gram cells summed in a
+    * 128-bit accumulator (per-row products fit a Long, but the corpus
+    * SUM grows as n·1e12 and would overflow Int64 past a few thousand
+    * rows), half-away integer
     * rounding of the n·p − sᵢsⱼ rational in BigInt at 1e8 scale, so
     * the "corpus scanned once, exact integer" contract holds at any
     * corpus size. Returns (matrix, per-dim 1e6-scale sums, rows). */
   def covariance(emb: DataFrame): (Array[Array[Double]], Array[Long], Long) = {
-    // quantize each coordinate ONCE per vector (r11) — Catalyst's own
+    // quantize each coordinate ONCE per vector — Catalyst's own
     // round() does the HALF_UP, so the integers are definitionally
-    // the engine's — then fold the per-dim sums AND the
-    // upper-triangular Gram TASK-SIDE in one pass (r12, guide
-    // §2.3/§2.4): the former shape posexploded the q array TWICE —
-    // d(d+1)/2 = 2080 rows per vector — into a 2080-key exchange,
-    // plus a separate per-dim sums job and a count job. One RDD
-    // aggregate now returns (n, d sums, 2080 Gram cells) to the
-    // driver directly: no explosion, no exchange, one job. Gram
-    // cells accumulate in exact signed 128-bit (two-long limbs —
-    // the task-side twin of the former decimal(38,0), needed because
-    // the corpus sum grows as n·1e12 and would overflow Int64 past a
-    // few thousand rows; ADVICE r9); integer addition is order-free,
-    // so the totals are bit-identical to the SQL aggregation's.
+    // the engine's — then fold n, the per-dim sums AND the
+    // upper-triangular Gram TASK-SIDE in one RDD aggregate that
+    // returns (n, d sums, d(d+1)/2 Gram cells) to the driver: no
+    // explosion, no exchange, one job. Gram cells accumulate in exact
+    // signed 128-bit (two-long limbs); integer addition is
+    // order-free, so the totals do not depend on partitioning.
     val q = emb.select(
       transform(col("embedding"),
         x => round(x.cast("double") * 1e6, 0).cast("long")).as("q"))
@@ -153,11 +147,9 @@ object Opq {
     * (all folds left-to-right — the oracle's list_sum order). */
   def topEig(mm: Array[Array[Double]]): (Array[Double], Double) = {
     val dims = mm.length
-    // hot loops as allocation-free while folds (r12): the former
-    // zip/map/sum chain boxed every product into tuples — ~13M
-    // allocations for a 64-dim solve. Accumulation order is the same
-    // left-to-right fold, so every double (and the oracle agreement)
-    // is bit-identical.
+    // hot loops as allocation-free while folds; each accumulates left
+    // to right, the oracle's list_sum order, so every double matches
+    // the oracle bit for bit.
     def matvec(x: Array[Double]): Array[Double] = {
       val w = new Array[Double](dims)
       var i = 0

@@ -70,16 +70,14 @@ object PqIndex {
     }: _*)
   }
 
-  /** Nearest-centroid assignment per (vector, subspace), ROW-LOCAL
-    * (optimization r12, guide §2.4): array_min over (dq, cid) against
-    * the literal codebook picks the same (quantized-L2 ASC, cid ASC)
-    * winner as the former broadcast join + groupBy(vec_id, m) min_by
-    * shape, with the corpus-sized exchange removed outright. */
+  /** Nearest-centroid assignment per (vector, subspace), ROW-LOCAL:
+    * array_min over (dq, cid) against the literal codebook picks the
+    * (quantized-L2 ASC, cid ASC) winner with no corpus-sized
+    * exchange. */
   private[graft] def assign(sub: DataFrame, cents: DataFrame): DataFrame = {
     val rows = cents.select(col("m").cast("int"), col("cid"), col("ce"))
       .collect()
-    // empty codebook (degenerate input): the former inner join
-    // produced zero rows — preserve that contract
+    // empty codebook (degenerate input): zero rows
     if (rows.isEmpty)
       return sub.select(col("vec_id"), col("m"),
         lit(null).cast(cents.schema("cid").dataType).as("cell"),
@@ -93,10 +91,7 @@ object PqIndex {
   }
 
   /** Per-(subspace, cell) exact integer-mean recentering — one
-    * map-side-combinable groupBy(m, cell) with dsub sum columns (r12)
-    * instead of the former posexplode + (m, cell, pos) shuffle +
-    * second (m, cell) shuffle; identical integer sums per position,
-    * so the quantized means are bit-identical. */
+    * map-side-combinable groupBy(m, cell) with dsub sum columns. */
   private[graft] def recenter(assigned: DataFrame, dsub: Int): DataFrame = {
     val sums = (0 until dsub).map(p =>
       sum(floor(element_at(col("sub"), p + 1).cast("double")

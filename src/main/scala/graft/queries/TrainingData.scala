@@ -61,7 +61,7 @@ object TrainingData {
     when(s < 0, lit(-1L)).otherwise(lit(1L)) *
       call_function("div", lit(2L) * abs(s) + n, lit(2L) * n)
 
-  private[queries] val stopwords = Seq("the", "a", "of", "and")
+  private[graft] val stopwords = Seq("the", "a", "of", "and")
 
   /** Documents plus synthesized duplicates (exact copies, id+1M) and
     * near-duplicates (one token appended, id+2M) — the corpus the
@@ -223,33 +223,42 @@ object TrainingData {
           ELSE CAST(len(regexp_split_to_array(clean, '\s+')) AS BIGINT) END
           AS clean_n_tok"""
 
-  /** [[graft.text.TextFunctions.qualityScore]] in DuckDB over a row's
-    * `text` and `toks`, rounded to 4 places. */
-  private[queries] def qualityRoundSql: String = """ROUND(
-          LEAST(len(toks) / 50.0, 1.0) * 0.4
-          + (1.0 - LEAST(CAST(length(text) - length(regexp_replace(text,
-                '[^A-Za-z0-9\s]', '', 'g')) AS DOUBLE)
-              / GREATEST(length(text), 1) * 5.0, 1.0)) * 0.3
-          + LEAST(CAST(len(list_filter(toks,
-                t -> t IN ('the', 'a', 'of', 'and'))) AS DOUBLE)
-              / GREATEST(len(toks), 1) * 10.0, 1.0) * 0.3, 4)"""
+  /** [[graft.text.TextFunctions.wsTokens]] of `text` in DuckDB. */
+  private[queries] def wsToksSql(text: String): String =
+    s"regexp_split_to_array(trim($text), '\\s+')"
 
-  /** The same score over [[qualityRatiosSql]]'s columns. */
-  private[queries] def qualityMixSql: String = """ROUND(LEAST(n_tok / 50.0, 1.0) * 0.4
-            + (1.0 - LEAST(punct_ratio * 5.0, 1.0)) * 0.3
-            + LEAST(stop_ratio * 10.0, 1.0) * 0.3, 4)"""
+  /** [[graft.text.TextFunctions.punctRatio]] of a row's `text` in DuckDB. */
+  private[queries] def punctRatioSql: String =
+    """CAST(length(text) - length(regexp_replace(text,
+            '[^A-Za-z0-9\s]', '', 'g')) AS DOUBLE) / GREATEST(length(text), 1)"""
 
-  /** `keys` and the score inputs `n_tok`, `punct_ratio` and
-    * `stop_ratio` of each row of `from`. */
-  private[queries] def qualityRatiosSql(keys: String, from: String): String =
-    s"""SELECT $keys, len(toks) AS n_tok,
-            CAST(length(text) - length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g'))
-              AS DOUBLE) / GREATEST(length(text), 1) AS punct_ratio,
-            CAST(len(list_filter(toks, t -> t IN ('the','a','of','and'))) AS DOUBLE)
-              / GREATEST(len(toks), 1) AS stop_ratio
-          FROM (SELECT $keys, text,
-                  regexp_split_to_array(trim(text), '\\s+') AS toks
-                FROM $from)"""
+  /** [[graft.text.TextFunctions.stopwordRatio]] of a row's `text` over
+    * the [[stopwords]] in DuckDB. */
+  private[queries] def stopRatioSql: String = {
+    val toks = wsToksSql("text")
+    s"""CAST(len(list_filter($toks,
+            t -> t IN (${stopwords.map(w => s"'$w'").mkString(", ")}))) AS DOUBLE)
+            / GREATEST(len($toks), 1)"""
+  }
+
+  /** [[graft.text.TextFunctions.qualitySignals]] of a row's `text` in
+    * DuckDB: length band, low punctuation and stopword presence. */
+  private[queries] def qualitySignalsSql: Seq[String] = Seq(
+    s"LEAST(len(${wsToksSql("text")}) / 50.0, 1.0)",
+    s"(1.0 - LEAST($punctRatioSql * 5.0, 1.0))",
+    s"LEAST($stopRatioSql * 10.0, 1.0)")
+
+  /** [[graft.text.TextFunctions.qualityScore]]'s rounded mix of the
+    * three signal expressions `sig` ([[qualitySignalsSql]]). */
+  private[queries] def qualityMixSql(sig: Seq[String]): String =
+    s"ROUND(${sig(0)} * 0.4 + ${sig(1)} * 0.3 + ${sig(2)} * 0.3, 4)"
+
+  /** [[graft.text.TextFunctions.qualityScore]] of a row's `text` in DuckDB. */
+  private[queries] def qualitySql: String = qualityMixSql(qualitySignalsSql)
+
+  /** [[graft.text.TextFunctions.qualityQ4]] of a row's `text` in DuckDB. */
+  private[queries] def qualityQ4Sql: String =
+    s"CAST(ROUND($qualitySql * 1e4, 0) AS BIGINT)"
 
   /** Deterministic hash sub-shard in [0, n): the first 16 bits of
     * md5(doc_id), reproducible bit-for-bit in DuckDB as
@@ -343,8 +352,9 @@ object TrainingData {
 
   /** The oracles' power-iteration eigensolver ([[graft.ml.Opq]]'s
     * eigensolve) for eigenpair `c` of the matrix CTE `src(m)`: `it<c>`
-    * runs 50 max-abs-normalized iterations from the all-ones vector,
-    * `uvec<c>` is the unit eigenvector and `lamt<c>` its Rayleigh
+    * runs 50 max-abs-normalized iterations from the all-ones vector
+    * (cast: a bare 1.0 is DECIMAL in DuckDB and would run the whole
+    * iteration in decimal arithmetic), `uvec<c>` is the unit eigenvector and `lamt<c>` its Rayleigh
     * eigenvalue. The query needs WITH RECURSIVE; no leading or
     * trailing comma. */
   private[queries] def powerIterCtes(c: String, src: String): String = s"""it$c(k, v) AS (

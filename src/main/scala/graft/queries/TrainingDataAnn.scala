@@ -1781,12 +1781,13 @@ object TrainingDataAnn {
       FROM $name WHERE rk <= $k ORDER BY qid, rk"""
 
   /** Recall@10 per query over `from(qid, rf, rq)`: the exact rank `rf`
-    * against the approximate rank `rq`. */
-  private def recallAt10Sql(from: String): String = s"""SELECT qid,
+    * against the approximate rank `rq`, plus the aggregate columns
+    * `more` (each led by a comma). */
+  private def recallAt10Sql(from: String, more: String = ""): String = s"""SELECT qid,
         CAST(SUM(CASE WHEN rf <= 10 AND rq <= 10 THEN 1 ELSE 0 END)
           AS BIGINT) AS n_match,
         CAST(SUM(CASE WHEN rf <= 10 AND rq <= 10 THEN 1 ELSE 0 END)
-          AS DOUBLE) / 10 AS recall_at_10
+          AS DOUBLE) / 10 AS recall_at_10$more
       FROM $from GROUP BY qid ORDER BY qid"""
 
   /** The PQ recall audit ([[pqRecallAt10]]) over the vectors of `src`:
@@ -1819,7 +1820,7 @@ object TrainingDataAnn {
 
   /** The parametric-OPQ rotation as DuckDB CTEs, ending in
     * `re(vec_id, embedding)` — the rotated corpus: the covariance CTEs
-    * (mat0, in HUGEINT where x65's are BIGINT) → 64 power-iteration +
+    * (mat0) → 64 power-iteration +
     * deflation blocks ([[eigenCtes]]; bit-exact vs the
     * [[graft.ml.Opq]] driver replica — prototype-verified over all
     * 4160 values) → the eigenvalue-allocation recursion → the
@@ -1829,20 +1830,8 @@ object TrainingDataAnn {
     val uUnion = (0 until 64).map(c => s"SELECT $c AS c, u FROM uvec$c")
       .mkString(" UNION ALL ")
     s"""WITH RECURSIVE $quantizedPairCtes,
-      cells AS MATERIALIZED (SELECT i, j,
-          CAST(SUM(CAST(qi AS HUGEINT) * qj) AS HUGEINT) AS p,
-          CAST(SUM(CASE WHEN j = i THEN qi END) AS BIGINT) AS s_diag
-        FROM p2 GROUP BY i, j),
-      $covSumsCtes,
-      covq AS (SELECT cells.i, cells.j,
-          CAST((CASE WHEN CAST(nn.n AS HUGEINT) * p
-              - CAST(si.s_ AS HUGEINT) * sj.s_ < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(CAST(nn.n AS HUGEINT) * p
-                - CAST(si.s_ AS HUGEINT) * sj.s_)
-              + CAST(nn.n AS HUGEINT) * nn.n * 10000)
-              // (2 * (CAST(nn.n AS HUGEINT) * nn.n * 10000)))
-            AS DOUBLE) / 1e8 AS cov
-        $covJoinSql),
+      ${covCellsCtes(mat = true)},
+      covq AS ($covSelectSql),
       ${covMatrixCtes("mat0")}
       ${eigenCtes(64)},
       ulist AS MATERIALIZED ($uUnion),
@@ -1905,27 +1894,32 @@ object TrainingDataAnn {
     * `p2(i, j, qi, qj)`. */
   private def quantizedPairCtes: String = s"$quantizedCompCtes,\n      $compPairCtes"
 
-  /** x46/x49/x65's exact-integer Gram cells `cells(i, j, p, s_diag)`
-    * over `p2`, the row count `nn` and the diagonal sums `sums`. */
-  private def covCellsCtes(mat: Boolean): String = s"""cells AS${matSql(mat)} (SELECT i, j, CAST(SUM(qi * qj) AS BIGINT) AS p,
+  /** The covariance oracles' exact-integer Gram cells
+    * `cells(i, j, p, s_diag)` over `p2`, the row count `nn` and the
+    * diagonal sums `sums`. The cross products and the numerator
+    * n·p − sᵢ·sⱼ run in HUGEINT, as [[graft.ml.Opq.covariance]]'s
+    * 128-bit fold does: with 1e-6-quantized components they overflow
+    * BIGINT past a few thousand vectors. */
+  private def covCellsCtes(mat: Boolean): String = s"""cells AS${matSql(mat)} (SELECT i, j,
+          CAST(SUM(CAST(qi AS HUGEINT) * qj) AS HUGEINT) AS p,
           CAST(SUM(CASE WHEN j = i THEN qi END) AS BIGINT) AS s_diag
         FROM p2 GROUP BY i, j),
-      $covSumsCtes"""
-
-  private def covSumsCtes: String = """nn AS (SELECT COUNT(*) AS n FROM embeddings),
+      nn AS (SELECT COUNT(*) AS n FROM embeddings),
       sums AS (SELECT i AS d_, s_diag AS s_ FROM cells WHERE j = i)"""
 
-  private def covJoinSql: String = """FROM cells
+  /** The covariance (i ≤ j) in exact 1e-8 units from [[covCellsCtes]]. */
+  private def covSelectSql: String = """SELECT cells.i, cells.j,
+          CAST((CASE WHEN CAST(nn.n AS HUGEINT) * p
+              - CAST(si.s_ AS HUGEINT) * sj.s_ < 0 THEN -1 ELSE 1 END)
+            * ((2 * abs(CAST(nn.n AS HUGEINT) * p
+                - CAST(si.s_ AS HUGEINT) * sj.s_)
+              + CAST(nn.n AS HUGEINT) * nn.n * 10000)
+              // (2 * (CAST(nn.n AS HUGEINT) * nn.n * 10000)))
+            AS DOUBLE) / 1e8 AS cov
+        FROM cells
         JOIN sums si ON si.d_ = cells.i
         JOIN sums sj ON sj.d_ = cells.j
         CROSS JOIN nn"""
-
-  /** The covariance (i ≤ j) in exact 1e-8 units from [[covCellsCtes]]. */
-  private def covSelectSql: String = s"""SELECT cells.i, cells.j,
-          CAST((CASE WHEN nn.n * p - si.s_ * sj.s_ < 0 THEN -1 ELSE 1 END)
-            * ((2 * abs(nn.n * p - si.s_ * sj.s_) + nn.n * nn.n * 10000)
-              // (2 * (nn.n * nn.n * 10000))) AS DOUBLE) / 1e8 AS cov
-        $covJoinSql"""
 
   /** The full symmetric matrix of `covq(i, j, cov)` as the one-row
     * CTE `out(m)`, a list of rows. */
@@ -2198,6 +2192,11 @@ object TrainingDataAnn {
     "x125_jl_projection" -> {
       val sgn = (0 until 16).map(c =>
         s"($c, [${jlSigns(c, 64).mkString(", ")}])").mkString(", ")
+      val ratios = """,
+        CAST(((2 * SUM(rq4) + COUNT(rq4)) // (2 * COUNT(rq4)))
+          AS DOUBLE) / 1e4 AS ratio_mean,
+        CAST(MIN(rq4) AS DOUBLE) / 1e4 AS ratio_min,
+        CAST(MAX(rq4) AS DOUBLE) / 1e4 AS ratio_max"""
       s"""
       WITH pr AS (
         SELECT vec_id, c,
@@ -2222,22 +2221,13 @@ object TrainingDataAnn {
       rk AS (
         SELECT qid, nid, d2o, d2p,
           ROW_NUMBER() OVER (PARTITION BY qid
-            ORDER BY ROUND(d2o, 6), nid) AS ro,
+            ORDER BY ROUND(d2o, 6), nid) AS rf,
           ROW_NUMBER() OVER (PARTITION BY qid
-            ORDER BY ROUND(d2p, 6), nid) AS rp,
+            ORDER BY ROUND(d2p, 6), nid) AS rq,
           CASE WHEN d2o > 0
             THEN CAST(ROUND(d2p / (16 * d2o) * 1e4, 0) AS BIGINT) END AS rq4
         FROM sc)
-      SELECT qid,
-        CAST(SUM(CASE WHEN ro <= 10 AND rp <= 10 THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_match,
-        CAST(SUM(CASE WHEN ro <= 10 AND rp <= 10 THEN 1 ELSE 0 END)
-          AS DOUBLE) / 10 AS recall_at_10,
-        CAST(((2 * SUM(rq4) + COUNT(rq4)) // (2 * COUNT(rq4)))
-          AS DOUBLE) / 1e4 AS ratio_mean,
-        CAST(MIN(rq4) AS DOUBLE) / 1e4 AS ratio_min,
-        CAST(MAX(rq4) AS DOUBLE) / 1e4 AS ratio_max
-      FROM rk GROUP BY qid ORDER BY qid"""
+      ${recallAt10Sql("rk", ratios)}"""
     },
     "x57_embed_outliers" -> """
       WITH d1 AS (SELECT vec_id, label,
@@ -2281,12 +2271,7 @@ object TrainingDataAnn {
       GROUP BY label, i
       ORDER BY label, pos""",
     "x101_pq_health" -> s"""
-      WITH ${pqCoarseCtes("embeddings", "af", mat = false)},
-      res AS (SELECT a.vec_id,
-          ${residualSql("a.sub", "c.ce")}
-            AS r
-        FROM af a JOIN c2f c ON c.m = a.m AND c.cid = a.cell),
-      ${pqCodebookCtes("rsub", "r", "res")},
+      WITH ${ivfPqStoreCtes("embeddings")},
       dist AS (SELECT k.vec_id, k.m, k.cell AS code,
           CAST(ROUND(${pqL2Sql("k.sub", "c.ce")} * 1e6, 0) AS BIGINT) AS dq
         FROM codes k JOIN c2 c ON c.m = k.m AND c.cid = k.cell),
@@ -2371,25 +2356,11 @@ object TrainingDataAnn {
       ${covCellsCtes(mat = false)},
       covq AS ($covSelectSql),
       ${covMatrixCtes("mat")},
-      it(k, v) AS (
-        -- CAST: a bare 1.0 literal is DECIMAL in DuckDB and would
-        -- run the whole iteration in decimal arithmetic
-        SELECT 0, list_transform(m[1], x -> CAST(1.0 AS DOUBLE)) FROM mat
-        UNION ALL
-        SELECT k + 1,
-          list_transform(w, x ->
-            x / list_max(list_transform(w, y -> abs(y))))
-        FROM (SELECT k,
-            list_transform(range(1, len(m) + 1), i ->
-              list_sum(list_transform(list_zip(m[i], v), p -> p[1] * p[2]))) AS w
-          FROM it, mat WHERE k < 50)),
-      fin AS (SELECT v FROM it WHERE k = 50),
-      uvec AS (SELECT list_transform(v, x ->
-          x / sqrt(list_sum(list_transform(v, y -> y * y)))) AS u FROM fin)
+      ${powerIterCtes("1", "mat")}
       SELECT e.vec_id,
         ROUND(list_sum(list_transform(list_zip(e.embedding, u.u),
           p -> CAST(p[1] AS DOUBLE) * p[2])), 6) AS pc1_score
-      FROM embeddings e, uvec u
+      FROM embeddings e, uvec1 u
       ORDER BY e.vec_id""",
     "x48_embed_correlation" -> s"""
       WITH $quantizedCompCtes,

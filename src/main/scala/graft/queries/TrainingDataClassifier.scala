@@ -401,27 +401,8 @@ object TrainingDataClassifier {
     * shape: ONE dense-feature scan; all 20 logits, σs and their
     * moments fold inside the task ([[trajPqRows]]), so the only
     * shuffle is the ≤8-row region rollup. */
-  val x157Cartography: Q = (s, d) => {
-    val traj = s.read.parquet(ensureClfTrajectory(s, d))
-    val (tf, _) = qualityClfTf(s, d)
-    import s.implicits._
-    val perDoc = trajPqRows(tf, traj).map { case (docId, y, _, pqs) =>
-      val k = pqs.length.toLong
-      var sp = 0L; var spp = 0L
-      var i = 0
-      while (i < pqs.length) {
-        val ptq = if (y == 1L) pqs(i) else 1000000L - pqs(i)
-        sp += ptq; spp += ptq * ptq; i += 1
-      }
-      (docId, y, intRoundHalfAwayL(sp, k),
-        rndQ(math.sqrt((k * spp - sp * sp).toDouble) / k.toDouble))
-    }.toDF("doc_id", "y", "conf_q", "vari_q")
-    perDoc
-      .withColumn("region",
-        when(col("vari_q") >= 100000L, "ambiguous")
-          .when(col("conf_q") >= 700000L, "easy_to_learn")
-          .when(col("conf_q") <= 300000L, "hard_to_learn")
-          .otherwise("middle"))
+  val x157Cartography: Q = (s, d) =>
+    trajDynamics(s, d)
       .groupBy(col("region"), col("y"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("conf_q")).as("sc"), sum(col("vari_q")).as("sv"))
@@ -431,6 +412,39 @@ object TrainingDataClassifier {
         (intRoundHalfAway(col("sv"), col("n_docs")).cast("double") / 1e6)
           .as("mean_vari"))
       .orderBy(col("region"), col("y"))
+
+  /** Per-doc training dynamics over the 20 [[ensureClfTrajectory]]
+    * snapshots, folded inside the task ([[trajPqRows]]) on each step's
+    * true-label probability ptq (1e-6 units): (doc_id, y, conf_q =
+    * mean ptq, vari_q = population std of ptq, n_ok = steps with
+    * ptq ≥ 0.5, forgets = correct→incorrect transitions between
+    * consecutive steps, region = the cartography map of (conf_q,
+    * vari_q)) — x157, x158 and x168's shared input. */
+  private def trajDynamics(s: SparkSession, d: String): DataFrame = {
+    val traj = s.read.parquet(ensureClfTrajectory(s, d))
+    val (tf, _) = qualityClfTf(s, d)
+    import s.implicits._
+    trajPqRows(tf, traj).map { case (docId, y, _, pqs) =>
+      val k = pqs.length.toLong
+      var sp = 0L; var spp = 0L; var nOk = 0L; var forgets = 0L
+      var prevOk = false
+      var i = 0
+      while (i < pqs.length) {
+        val ptq = if (y == 1L) pqs(i) else 1000000L - pqs(i)
+        val ok = ptq >= 500000L
+        sp += ptq; spp += ptq * ptq
+        if (ok) nOk += 1L
+        if (prevOk && !ok) forgets += 1L
+        prevOk = ok; i += 1
+      }
+      (docId, y, intRoundHalfAwayL(sp, k),
+        rndQ(math.sqrt((k * spp - sp * sp).toDouble) / k.toDouble), nOk, forgets)
+    }.toDF("doc_id", "y", "conf_q", "vari_q", "n_ok", "forgets")
+      .withColumn("region",
+        when(col("vari_q") >= 100000L, "ambiguous")
+          .when(col("conf_q") >= 700000L, "easy_to_learn")
+          .when(col("conf_q") <= 300000L, "hard_to_learn")
+          .otherwise("middle"))
   }
 
   /** X158: forgetting events (Toneva et al. 2019, "An empirical study
@@ -449,23 +463,8 @@ object TrainingDataClassifier {
     * step scan folds over one step-ordered array inside the task
     * ([[trajPqRows]]; bounded, no window exchange), so only the ≤2-row
     * label rollup shuffles. */
-  val x158ForgettingEvents: Q = (s, d) => {
-    val traj = s.read.parquet(ensureClfTrajectory(s, d))
-    val (tf, _) = qualityClfTf(s, d)
-    import s.implicits._
-    val perDoc = trajPqRows(tf, traj).map { case (docId, y, _, pqs) =>
-      var nOk = 0L; var forgets = 0L; var prevOk = false
-      var i = 0
-      while (i < pqs.length) {
-        val ptq = if (y == 1L) pqs(i) else 1000000L - pqs(i)
-        val ok = ptq >= 500000L
-        if (ok) nOk += 1L
-        if (i >= 1 && prevOk && !ok) forgets += 1L
-        prevOk = ok; i += 1
-      }
-      (docId, y, nOk, forgets)
-    }.toDF("doc_id", "y", "n_ok", "forgets")
-    perDoc.groupBy(col("y"))
+  val x158ForgettingEvents: Q = (s, d) =>
+    trajDynamics(s, d).groupBy(col("y"))
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("n_ok") === 0L, 1L).otherwise(0L))
           .as("n_never_learned"),
@@ -481,7 +480,6 @@ object TrainingDataClassifier {
           .cast("double") / 1e4).as("mean_forgets"),
         col("max_forgets"))
       .orderBy(col("y"))
-  }
 
   /** X168: curriculum schedule from training dynamics — the artifact
     * a trainer actually CONSUMES from the trajectory family: x157
@@ -504,28 +502,7 @@ object TrainingDataClassifier {
     * Int64 up to ~10⁹-token corpora; production id widths promote the
     * quota products to decimal(38,0) — the Opq precedent). */
   val x168CurriculumSchedule: Q = (s, d) => {
-    val traj = s.read.parquet(ensureClfTrajectory(s, d))
-    val (tf, _) = qualityClfTf(s, d)
-    import s.implicits._
-    val perDoc = trajPqRows(tf, traj).map { case (docId, y, _, pqs) =>
-      val k = pqs.length.toLong
-      var sp = 0L; var spp = 0L; var nOk = 0L
-      var i = 0
-      while (i < pqs.length) {
-        val ptq = if (y == 1L) pqs(i) else 1000000L - pqs(i)
-        sp += ptq; spp += ptq * ptq
-        if (ptq >= 500000L) nOk += 1L
-        i += 1
-      }
-      (docId, intRoundHalfAwayL(sp, k),
-        rndQ(math.sqrt((k * spp - sp * sp).toDouble) / k.toDouble), nOk)
-    }.toDF("doc_id", "conf_q", "vari_q", "n_ok")
-    val staged = perDoc
-      .withColumn("region",
-        when(col("vari_q") >= 100000L, "ambiguous")
-          .when(col("conf_q") >= 700000L, "easy_to_learn")
-          .when(col("conf_q") <= 300000L, "hard_to_learn")
-          .otherwise("middle"))
+    val staged = trajDynamics(s, d)
       .withColumn("stage",
         when(col("n_ok") === 0L, 0L)
           .when(col("region") === "easy_to_learn", 1L)
@@ -710,21 +687,20 @@ object TrainingDataClassifier {
     * `documents`, the dedup corpora, stream batches); a null text or
     * one with no non-empty token gives no row. Dense: (doc_id, y,
     * xs: array<double>[68]), xs(b) = cnt(b) / n_tok over the
-    * [[hashedBowRows]] counts, 0.0 where the doc never fires — every
-    * downstream logit/gradient term round(w·0·1e9) is then 0, so
-    * scoring and each GD step are row-local folds. One projection
-    * over one scan. */
+    * [[hashedBowRows]] counts for b < 64, 0.0 where the doc never
+    * fires — every downstream logit/gradient term round(w·0·1e9) is
+    * then 0, so scoring and each GD step are row-local folds;
+    * xs(64..66) are the [[qualitySignals]], xs(67) the bias 1.0, and
+    * y = [[qualityScore]] ≥ 0.5. One projection over one scan. */
   private[graft] def clfFeatures(docs: DataFrame): DataFrame = {
-    val lenScore = least(tokenCount(col("text")).cast("double") / 50.0, lit(1.0))
-    val punctOk = lit(1.0) - least(punctRatio(col("text")) * 5.0, lit(1.0))
-    val stopOk = least(stopwordRatio(col("text"), stopwords) * 10.0, lit(1.0))
+    val signals = qualitySignals(col("text"), stopwords)
     hashedBowRows(docs)
       .select(col("doc_id"),
         (qualityScore(col("text"), stopwords) >= 0.5).cast("long").as("y"),
         concat(
           aggregate(col("cnt"), lit(0L), (n, c) => n + c, nTok =>
             transform(col("cnt"), c => c.cast("double") / nTok.cast("double"))),
-          array(lenScore, punctOk, stopOk, lit(1.0))).as("xs"))
+          array(signals :+ lit(1.0): _*)).as("xs"))
   }
 
   /** A weight RELATION (bucket, wb — the registry/store schema)
@@ -1158,8 +1134,7 @@ object TrainingDataClassifier {
     (1 to 20).map(k => s""",
       ${clfLogitCte(s"z$k", w = s"w${k - 1}", mat = true)},
       g$k AS MATERIALIZED (SELECT t.bucket,
-          CAST(SUM(CAST(ROUND((CAST(CAST(ROUND((1 / (1
-            + exp(-(CAST(z.zq AS DOUBLE) / 1e9)))) * 1e6, 0) AS BIGINT)
+          CAST(SUM(CAST(ROUND((CAST(${clfProbSql("CAST(z.zq AS DOUBLE) / 1e9")}
             AS DOUBLE) / 1e6 - z.y) * t.x * 1e6, 0) AS BIGINT)) AS BIGINT)
             AS gq
         FROM tf t JOIN z$k z USING (doc_id) GROUP BY t.bucket),
@@ -1175,7 +1150,8 @@ object TrainingDataClassifier {
     * no trailing comma): `tfc(doc_id, bucket, cnt)` hashed token
     * counts, `ntok(doc_id, n_tok)` and `feat(doc_id, f_len, f_punct,
     * f_stop)`. */
-  private def clfFeatCtes: String =
+  private def clfFeatCtes: String = {
+    val feat = qualitySignalsSql.zip(featCols).map { case (e, c) => s"$e AS $c" }
     s"""tfc AS (SELECT doc_id, bucket, CAST(COUNT(*) AS BIGINT) AS cnt
         FROM (SELECT doc_id, (${md5Hash32Sql("w")}) % 64 AS bucket
           FROM (SELECT doc_id,
@@ -1184,18 +1160,12 @@ object TrainingDataClassifier {
           WHERE w <> '') GROUP BY 1, 2),
       ntok AS (SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n_tok
         FROM tfc GROUP BY doc_id),
-      feat AS (SELECT doc_id,
-          LEAST(len(regexp_split_to_array(trim(text), '\\s+')) / 50.0, 1.0)
-            AS f_len,
-          1.0 - LEAST((CAST(length(text)
-              - length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g'))
-            AS DOUBLE) / GREATEST(length(text), 1)) * 5.0, 1.0) AS f_punct,
-          LEAST((CAST(len(list_filter(
-              regexp_split_to_array(trim(text), '\\s+'),
-              t -> t IN ('the', 'a', 'of', 'and'))) AS DOUBLE)
-            / GREATEST(len(regexp_split_to_array(trim(text), '\\s+')), 1))
-            * 10.0, 1.0) AS f_stop
+      feat AS (SELECT doc_id, ${feat.mkString(",\n          ")}
         FROM documents)"""
+  }
+
+  /** [[clfFeatCtes]]'s `feat` columns, the quality signals xs(64..66). */
+  private def featCols = Seq("f_len", "f_punct", "f_stop")
 
   /** Shared DuckDB generator for the trained-classifier oracles
     * (x108/x118): feature build + 20 unrolled logistic-GD iterations,
@@ -1206,8 +1176,7 @@ object TrainingDataClassifier {
   private def clfTrainedSql: String =
     s"""WITH $clfFeatCtes,
       lab AS (SELECT doc_id,
-          CASE WHEN ROUND(f_len * 0.4 + f_punct * 0.3 + f_stop * 0.3, 4)
-            >= 0.5 THEN 1 ELSE 0 END AS y,
+          CASE WHEN ${qualityMixSql(featCols)} >= 0.5 THEN 1 ELSE 0 END AS y,
           f_len, f_punct, f_stop
         FROM feat),
       tf AS (
@@ -1236,9 +1205,10 @@ object TrainingDataClassifier {
             AS BIGINT) AS zq
         FROM $from, $w GROUP BY doc_id, y)"""
 
-  /** The sigmoid of a row's logit `zq`, quantized to 1e-6. */
-  private def clfProbSql: String =
-    """CAST(ROUND((1 / (1 + exp(-(CAST(zq AS DOUBLE) / 1e9)))) * 1e6, 0)
+  /** The sigmoid of the logit `z` (by default a row's 1e-9-quantized
+    * `zq`), quantized to 1e-6. */
+  private def clfProbSql(z: String = "CAST(zq AS DOUBLE) / 1e9"): String =
+    s"""CAST(ROUND((1 / (1 + exp(-($z)))) * 1e6, 0)
             AS BIGINT)"""
 
   /** [[clfTrainedSql]]'s trained model applied to the features `from`:
@@ -1247,12 +1217,16 @@ object TrainingDataClassifier {
   private def clfScoredCtes(keys: String = "doc_id, y", from: String = "tf",
       z: String = "zs", p: String = "ps"): String = s"""${clfLogitCte(z, from)},
       $p AS (SELECT $keys,
-          $clfProbSql AS pq
+          ${clfProbSql()} AS pq
         FROM $z)"""
+
+  /** A row's logit `zq` divided by its temperature `tq` (1e-2 units). */
+  private def tempLogitSql: String =
+    "(CAST(zq AS DOUBLE) / 1e9) / (CAST(tq AS DOUBLE) / 100)"
 
   /** Each trajectory logit of [[clfTrajCtes]] as `pq`. */
   private def trajProbSql(keys: String): String = s"""SELECT $keys,
-            $clfProbSql AS pq
+            ${clfProbSql()} AS pq
           FROM trajz"""
 
   /** The reliability-diagram columns of a per-bin `(bin, n_docs, spq,
@@ -1277,14 +1251,47 @@ object TrainingDataClassifier {
       cut AS (SELECT MIN($v) AS $name FROM c, tt WHERE $cond)"""
 
   /** [[clfTrainedSql]]'s training trajectory: `zf`, the final model's
-    * logits, and `trajz(doc_id, y, zq)`, every doc's logit after each of
-    * the 20 steps (no leading or trailing comma). */
+    * logits, and `trajz(doc_id, y, step, zq)`, every doc's logit after
+    * each of the 20 steps (no leading or trailing comma). */
   private def clfTrajCtes: String = {
-    val stepUnion = (2 to 20).map(k => s"SELECT doc_id, y, zq FROM z$k")
+    val stepUnion = (2 to 20)
+      .map(k => s"SELECT doc_id, y, CAST(${k - 1} AS BIGINT) AS step, zq FROM z$k")
       .mkString(" UNION ALL ")
     s"""${clfLogitCte("zf", mat = true)},
-      trajz AS ($stepUnion UNION ALL SELECT doc_id, y, zq FROM zf)"""
+      trajz AS ($stepUnion
+        UNION ALL SELECT doc_id, y, CAST(20 AS BIGINT), zq FROM zf)"""
   }
+
+  /** [[trajDynamics]] in DuckDB over [[clfTrajCtes]]: each snapshot's
+    * true-label probability `ptr(doc_id, y, step, ptq, ok)`, its
+    * forgetting flags `fg`, the per-doc sums `pd` and
+    * `dyn(doc_id, y, conf_q, vari_q, n_ok, forgets, region)` (no
+    * leading or trailing comma). */
+  private def trajDynamicsCtes: String = s"""ptr AS (SELECT doc_id, y, step, ptq,
+          ptq >= 500000 AS ok
+        FROM (SELECT doc_id, y, step,
+            CASE WHEN y = 1 THEN pq ELSE 1000000 - pq END AS ptq
+          FROM (${trajProbSql("doc_id, y, step")}))),
+      fg AS (SELECT doc_id, y, ptq, ok,
+          CASE WHEN LAG(ok) OVER (PARTITION BY doc_id ORDER BY step)
+            AND NOT ok THEN 1 ELSE 0 END AS forgot
+        FROM ptr),
+      pd AS (SELECT doc_id, y, CAST(COUNT(*) AS BIGINT) AS k,
+          CAST(SUM(ptq) AS BIGINT) AS sp,
+          CAST(SUM(ptq * ptq) AS BIGINT) AS spp,
+          CAST(SUM(CASE WHEN ok THEN 1 ELSE 0 END) AS BIGINT) AS n_ok,
+          CAST(SUM(forgot) AS BIGINT) AS forgets
+        FROM fg GROUP BY doc_id, y),
+      dyn AS (SELECT doc_id, y, conf_q, vari_q, n_ok, forgets,
+          CASE WHEN vari_q >= 100000 THEN 'ambiguous'
+               WHEN conf_q >= 700000 THEN 'easy_to_learn'
+               WHEN conf_q <= 300000 THEN 'hard_to_learn'
+               ELSE 'middle' END AS region
+        FROM (SELECT doc_id, y, n_ok, forgets,
+            (2 * sp + k) // (2 * k) AS conf_q,
+            CAST(ROUND(SQRT(CAST(k * spp - sp * sp AS DOUBLE))
+              / CAST(k AS DOUBLE), 0) AS BIGINT) AS vari_q
+          FROM pd))"""
 
   /** x175's trainer unroll: [[clfTrainedSql]]'s exact iteration
     * template (same tfc/ntok/feat CTEs, same 20 z/g/gl/w steps) with
@@ -1349,11 +1356,8 @@ object TrainingDataClassifier {
         CAST(t0 AS DOUBLE) / 1e6 AS t0
       FROM sc, th GROUP BY source, t1, t0 ORDER BY source""",
     "x139_uncertainty_sample" -> s"""$clfTrainedSql,
-      ${clfLogitCte("zs")},
-      ps AS (SELECT doc_id,
-          ABS($clfProbSql - 500000) AS mg
-        FROM zs),
-      sc AS (SELECT p.doc_id, p.mg, d.source
+      ${clfScoredCtes("doc_id")},
+      sc AS (SELECT p.doc_id, ABS(p.pq - 500000) AS mg, d.source
         FROM ps p JOIN documents d USING (doc_id)),
       ${cutCtes("mg", "cut05", "cum * 20 >= n")}
       SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -1404,9 +1408,8 @@ object TrainingDataClassifier {
           % 100 BETWEEN 90 AND 94),
       grid AS (SELECT unnest(range(25, 401, 5)) AS tq),
       pt AS (SELECT vz.y, grid.tq,
-          LEAST(GREATEST(CAST(ROUND((1 / (1 + exp(-((CAST(zq AS DOUBLE)
-              / 1e9) / (CAST(tq AS DOUBLE) / 100))))) * 1e6, 0) AS BIGINT),
-            1), 999999) AS pc
+          LEAST(GREATEST(${clfProbSql(tempLogitSql)}, 1), 999999)
+            AS pc
         FROM vz, grid),
       nl AS (SELECT tq, CAST(SUM(CAST(ROUND(-ln(CAST(
             CASE WHEN y = 1 THEN pc ELSE 1000000 - pc END AS DOUBLE) / 1e6)
@@ -1414,8 +1417,7 @@ object TrainingDataClassifier {
         FROM pt GROUP BY tq),
       ts AS (SELECT tq FROM nl ORDER BY snll, tq LIMIT 1),
       cp AS (SELECT zs.y, ts.tq,
-          CAST(ROUND((1 / (1 + exp(-((CAST(zq AS DOUBLE) / 1e9)
-            / (CAST(ts.tq AS DOUBLE) / 100))))) * 1e6, 0) AS BIGINT) AS pq
+          ${clfProbSql(tempLogitSql)} AS pq
         FROM zs, ts),
       bn AS (SELECT LEAST(pq // 100000, 9) AS bin, tq,
           CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -1448,13 +1450,9 @@ object TrainingDataClassifier {
           AS agree_rate
       FROM j GROUP BY source ORDER BY source""",
     "x164_wilson_bound" -> s"""$clfTrainedSql,
-      ${clfLogitCte("zs")},
-      ps AS (SELECT doc_id,
-          CASE WHEN $clfProbSql >= 500000
-          THEN 1 ELSE 0 END AS kept
-        FROM zs),
+      ${clfScoredCtes("doc_id")},
       ct AS (SELECT d.source, CAST(COUNT(*) AS BIGINT) AS n,
-          CAST(SUM(p.kept) AS BIGINT) AS k
+          CAST(SUM(CASE WHEN p.pq >= 500000 THEN 1 ELSE 0 END) AS BIGINT) AS k
         FROM ps p JOIN documents d USING (doc_id) GROUP BY d.source)
       SELECT source, n AS n_docs, k AS n_kept,
         CAST(((2 * k * 10000 + n) // (2 * n)) AS DOUBLE) / 1e4
@@ -1469,17 +1467,16 @@ object TrainingDataClassifier {
           AS DOUBLE) / 1e4 AS wilson_lb
       FROM ct ORDER BY source""",
     "x163_cohen_kappa" -> s"""$clfTrainedSql,
-      ${clfLogitCte("zs")},
-      ps AS (SELECT doc_id, y,
-          CASE WHEN $clfProbSql >= 500000
-          THEN 1 ELSE 0 END AS yhat
-        FROM zs),
+      ${clfScoredCtes()},
+      yh AS (SELECT doc_id, y,
+          CASE WHEN pq >= 500000 THEN 1 ELSE 0 END AS yhat
+        FROM ps),
       ct AS (SELECT d.source, CAST(COUNT(*) AS BIGINT) AS n,
           CAST(SUM(CASE WHEN p.y = p.yhat THEN 1 ELSE 0 END) AS BIGINT)
             AS agree,
           CAST(SUM(p.y) AS BIGINT) AS p1,
           CAST(SUM(p.yhat) AS BIGINT) AS p2
-        FROM ps p JOIN documents d USING (doc_id) GROUP BY d.source)
+        FROM yh p JOIN documents d USING (doc_id) GROUP BY d.source)
       SELECT source, n AS n_docs,
         CAST(((2 * agree * 10000 + n) // (2 * n)) AS DOUBLE) / 1e4 AS po,
         CAST(((2 * (p1 * p2 + (n - p1) * (n - p2)) * 10000 + n * n)
@@ -1540,7 +1537,7 @@ object TrainingDataClassifier {
     "x159_tracin_self" -> s"""$clfTrainedSql,
       $clfTrajCtes,
       dqt AS (SELECT doc_id, y,
-          $clfProbSql - y * 1000000 AS dq
+          ${clfProbSql()} - y * 1000000 AS dq
         FROM trajz),
       am AS (SELECT doc_id, y,
           (2 * CAST(SUM(dq * dq) AS BIGINT) + 1000000) // 2000000 AS a6
@@ -1560,32 +1557,13 @@ object TrainingDataClassifier {
       FROM top WHERE rk <= 20 ORDER BY rk""",
     "x168_curriculum_schedule" -> s"""$clfTrainedSql,
       $clfTrajCtes,
-      ptr AS (SELECT doc_id, y,
-          CASE WHEN y = 1 THEN pq ELSE 1000000 - pq END AS ptq
-        FROM (${trajProbSql("doc_id, y")})),
-      pd AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS k,
-          CAST(SUM(ptq) AS BIGINT) AS sp,
-          CAST(SUM(ptq * ptq) AS BIGINT) AS spp,
-          CAST(SUM(CASE WHEN ptq >= 500000 THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_ok
-        FROM ptr GROUP BY doc_id),
-      cv AS (SELECT doc_id,
-          (2 * sp + k) // (2 * k) AS conf_q,
-          CAST(ROUND(SQRT(CAST(k * spp - sp * sp AS DOUBLE))
-            / CAST(k AS DOUBLE), 0) AS BIGINT) AS vari_q,
-          n_ok
-        FROM pd),
+      $trajDynamicsCtes,
       st AS (SELECT doc_id, region,
           CASE WHEN n_ok = 0 THEN 0
                WHEN region = 'easy_to_learn' THEN 1
                WHEN region IN ('middle', 'ambiguous') THEN 2
                ELSE 3 END AS stage
-        FROM (SELECT doc_id, n_ok,
-            CASE WHEN vari_q >= 100000 THEN 'ambiguous'
-                 WHEN conf_q >= 700000 THEN 'easy_to_learn'
-                 WHEN conf_q <= 300000 THEN 'hard_to_learn'
-                 ELSE 'middle' END AS region
-          FROM cv)),
+        FROM dyn),
       ntk AS (SELECT doc_id,
           CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT)
             AS t
@@ -1609,25 +1587,9 @@ object TrainingDataClassifier {
           OVER (ORDER BY rem DESC, stage, region) <= k
           THEN 1 ELSE 0 END AS BIGINT) AS alloc
       FROM bs, kk ORDER BY stage, region""",
-    "x158_forgetting_events" -> {
-      val stepUnion = (2 to 20)
-        .map(k => s"SELECT doc_id, y, CAST(${k - 1} AS BIGINT) AS step, zq FROM z$k")
-        .mkString(" UNION ALL ")
-      s"""$clfTrainedSql,
-      ${clfLogitCte("zf", mat = true)},
-      trajz AS ($stepUnion
-        UNION ALL SELECT doc_id, y, CAST(20 AS BIGINT), zq FROM zf),
-      okt AS (SELECT doc_id, y, step,
-          (CASE WHEN y = 1 THEN pq ELSE 1000000 - pq END) >= 500000 AS ok
-        FROM (${trajProbSql("doc_id, y, step")})),
-      fg AS (SELECT doc_id, y, ok,
-          CASE WHEN LAG(ok) OVER (PARTITION BY doc_id ORDER BY step)
-            AND NOT ok THEN 1 ELSE 0 END AS forgot
-        FROM okt),
-      pd AS (SELECT doc_id, y,
-          CAST(SUM(CASE WHEN ok THEN 1 ELSE 0 END) AS BIGINT) AS n_ok,
-          CAST(SUM(forgot) AS BIGINT) AS forgets
-        FROM fg GROUP BY doc_id, y)
+    "x158_forgetting_events" -> s"""$clfTrainedSql,
+      $clfTrajCtes,
+      $trajDynamicsCtes
       SELECT CAST(y AS BIGINT) AS y, CAST(COUNT(*) AS BIGINT) AS n_docs,
         CAST(SUM(CASE WHEN n_ok = 0 THEN 1 ELSE 0 END) AS BIGINT)
           AS n_never_learned,
@@ -1638,36 +1600,17 @@ object TrainingDataClassifier {
         CAST(((2 * SUM(forgets) * 10000 + COUNT(*)) // (2 * COUNT(*)))
           AS DOUBLE) / 1e4 AS mean_forgets,
         CAST(MAX(forgets) AS BIGINT) AS max_forgets
-      FROM pd GROUP BY y ORDER BY y"""
-    },
+      FROM dyn GROUP BY y ORDER BY y""",
     "x157_cartography" -> s"""$clfTrainedSql,
       $clfTrajCtes,
-      ptr AS (SELECT doc_id, y,
-          CASE WHEN y = 1 THEN pq ELSE 1000000 - pq END AS ptq
-        FROM (${trajProbSql("doc_id, y")})),
-      pd AS (SELECT doc_id, y, CAST(COUNT(*) AS BIGINT) AS k,
-          CAST(SUM(ptq) AS BIGINT) AS sp,
-          CAST(SUM(ptq * ptq) AS BIGINT) AS spp
-        FROM ptr GROUP BY doc_id, y),
-      cv AS (SELECT doc_id, y,
-          (2 * sp + k) // (2 * k) AS conf_q,
-          CAST(ROUND(SQRT(CAST(k * spp - sp * sp AS DOUBLE))
-            / CAST(k AS DOUBLE), 0) AS BIGINT) AS vari_q
-        FROM pd),
-      rg AS (SELECT y,
-          CASE WHEN vari_q >= 100000 THEN 'ambiguous'
-               WHEN conf_q >= 700000 THEN 'easy_to_learn'
-               WHEN conf_q <= 300000 THEN 'hard_to_learn'
-               ELSE 'middle' END AS region,
-          conf_q, vari_q
-        FROM cv)
+      $trajDynamicsCtes
       SELECT region, CAST(y AS BIGINT) AS y,
         CAST(COUNT(*) AS BIGINT) AS n_docs,
         CAST(((2 * SUM(conf_q) + COUNT(*)) // (2 * COUNT(*)))
           AS DOUBLE) / 1e6 AS mean_conf,
         CAST(((2 * SUM(vari_q) + COUNT(*)) // (2 * COUNT(*)))
           AS DOUBLE) / 1e6 AS mean_vari
-      FROM rg GROUP BY region, y ORDER BY region, y""",
+      FROM dyn GROUP BY region, y ORDER BY region, y""",
     "x150_el2n_prune" -> s"""$clfTrainedSql,
       ${clfScoredCtes()},
       sc AS MATERIALIZED (SELECT d.source, p.y,

@@ -91,8 +91,7 @@ object TrainingDataDedup {
     val corpus = corpusWithDupes(s, d).filter(col("doc_id") % 1000000 < 200)
     val cl = graft.dedup.NearDup.clusters(corpus, ngramJaccardPairs(s, d))
     val q = corpus.select(col("doc_id"),
-      round(qualityScore(col("text"), stopwords) * 1e4, 0).cast("long")
-        .as("q4"))
+      qualityQ4(col("text"), stopwords).as("q4"))
     cl.select(col("doc_id"), col("canonico")).join(q, Seq("doc_id"))
       .groupBy(col("canonico"))
       .agg(count(lit(1)).as("n_membros"),
@@ -1619,10 +1618,11 @@ object TrainingDataDedup {
         FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
         WHERE a.doc_id < b.doc_id)"""
 
-  /** x91/x105's [[lshEvalCorpusSql]] corpus with its shingles,
-    * sizes, LSH candidates and exact intersections. */
-  private def lshEvalCandCtes: String = s"""corpus AS (
-        $lshEvalCorpusSql),
+  /** The (doc_id, text) query body `corpus` as the CTE `corpus` with
+    * its shingles, sizes, LSH candidates and exact intersections (x91,
+    * x105, x124, x60). */
+  private def lshCandInterCtes(corpus: String): String = s"""corpus AS (
+        $corpus),
       $shingleSetCtes,
       $shingleSizesCte,
       $lshCandCtes,
@@ -1882,33 +1882,9 @@ object TrainingDataDedup {
           <= 0.2 AS confirmed
       FROM v ORDER BY id_a, id_b""",
     "x60_signature_store" -> s"""
-      WITH corpus AS (
-        SELECT doc_id, text FROM documents WHERE doc_id % 1000000 < 200
-        UNION ALL
-        SELECT doc_id + 1000000, text FROM documents
-        WHERE doc_id % 1000000 < 200
-        UNION ALL
-        SELECT doc_id + 2000000, text || ' extra' FROM documents
-        WHERE doc_id % 1000000 < 200),
-      $shingleSetCtes,
-      $minhashBandCtes,
-      cand AS (
-        SELECT DISTINCT n.doc_id AS new_id, o.doc_id AS old_id
-        FROM bands n JOIN bands o ON n.band = o.band AND n.key = o.key
-        WHERE n.doc_id >= 1000000 AND o.doc_id < 1000000),
-      sizes AS (SELECT doc_id, len(shs) AS n FROM docs),
-      inter AS (
-        SELECT a.doc_id AS new_id, b.doc_id AS old_id, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON a.sh = b.sh
-        WHERE a.doc_id >= 1000000 AND b.doc_id < 1000000
-        GROUP BY 1, 2)
-      SELECT c.new_id, c.old_id,
-        ROUND(CAST(i.inter AS DOUBLE) / (sa.n + sb.nb - i.inter), 4) AS jaccard
-      FROM cand c
-      JOIN inter i USING (new_id, old_id)
-      JOIN (SELECT doc_id AS new_id, n FROM sizes) sa USING (new_id)
-      JOIN (SELECT doc_id AS old_id, n AS nb FROM sizes) sb USING (old_id)
-      WHERE ROUND(CAST(i.inter AS DOUBLE) / (sa.n + sb.nb - i.inter), 4) >= 0.5
+      WITH ${lshCandInterCtes(sliverCorpusSql)}
+      SELECT c.id_b AS new_id, c.id_a AS old_id, $candJaccardSql AS jaccard
+      ${candVerifySql(">= 0.5 AND c.id_a < 1000000 AND c.id_b >= 1000000")}
       ORDER BY new_id, old_id""",
     "x134_source_run_overlap" -> s"""
       WITH ${winnowCtesSql("SELECT doc_id, text FROM documents")},
@@ -1970,16 +1946,7 @@ object TrainingDataDedup {
         CAST(COALESCE(n.n_nbr, 0) AS BIGINT) AS n_nbr
       FROM wf w LEFT JOIN nbr n USING (doc_id) ORDER BY doc_id""",
     "x124_bbit_minhash" -> s"""
-      WITH corpus AS (
-        $sliverCorpusSql),
-      $shingleSetCtes,
-      $lshCandCtes,
-      sizes AS (SELECT doc_id, CAST(len(shs) AS BIGINT) AS n FROM docs),
-      inter AS (
-        SELECT c.id_a, c.id_b, CAST(COUNT(*) AS BIGINT) AS inter
-        FROM cand c JOIN sh a ON a.doc_id = c.id_a
-        JOIN sh b ON b.doc_id = c.id_b AND b.sh = a.sh
-        GROUP BY 1, 2),
+      WITH ${lshCandInterCtes(sliverCorpusSql)},
       ag AS (
         SELECT c.id_a, c.id_b,
           CAST(SUM(CASE WHEN ma.mh = mb.mh THEN 1 ELSE 0 END) AS BIGINT)
@@ -2014,7 +1981,7 @@ object TrainingDataDedup {
           AS err_bbit
       FROM e GROUP BY band ORDER BY band""",
     "x105_threshold_sweep" -> s"""
-      WITH $lshEvalCandCtes,
+      WITH ${lshCandInterCtes(lshEvalCorpusSql)},
       jc AS (
         SELECT c.id_a, c.id_b,
           $candJaccardSql
@@ -2032,7 +1999,7 @@ object TrainingDataDedup {
           / 1e4 AS share
       FROM sweep, tot ORDER BY threshold""",
     "x91_lsh_precision" -> s"""
-      WITH $lshEvalCandCtes,
+      WITH ${lshCandInterCtes(lshEvalCorpusSql)},
       jc AS (
         SELECT LEAST(FLOOR($candJaccardSql * 10) / 10, 0.9) AS band
         ${candVerifySql("> 0")}),
@@ -2146,11 +2113,7 @@ object TrainingDataDedup {
       FROM k ORDER BY doc_id""",
     "x88_quality_survivors" -> s"""
       $dedupClusterCtes,
-      q AS (
-        SELECT doc_id,
-          $qualityMixSql AS quality
-        FROM (
-          ${qualityRatiosSql("doc_id", "corpus")})),
+      q AS (SELECT doc_id, $qualitySql AS quality FROM corpus),
       j AS (SELECT l.doc_id, l.canonico, q.quality,
           ROW_NUMBER() OVER (PARTITION BY l.canonico
             ORDER BY q.quality DESC, l.doc_id) AS rk
@@ -2230,11 +2193,7 @@ object TrainingDataDedup {
       ORDER BY l.doc_id""",
     "x152_quality_survivor" -> s"""
       $dedupClusterCtes,
-      q AS (SELECT doc_id, CAST(ROUND($qualityRoundSql * 1e4, 0)
-          AS BIGINT) AS q4
-        FROM (SELECT doc_id, text,
-            regexp_split_to_array(trim(text), '\\s+') AS toks
-          FROM corpus)),
+      q AS (SELECT doc_id, $qualityQ4Sql AS q4 FROM corpus),
       mem AS (SELECT l.canonico, l.doc_id, q.q4
         FROM labels l JOIN q USING (doc_id)),
       sz AS (SELECT canonico, CAST(COUNT(*) AS BIGINT) AS n_membros

@@ -861,13 +861,13 @@ object TrainingDataLm {
   private[graft] def emInterpLambdas(scored: DataFrame,
       iters: Int = 5): (Seq[Double], Long) = {
     val t = scored.count()
-    // ONE job per EM step (r12 — the trainQualityClfSteps
-    // shape): the four responsibility sums are order-free BIGINT
-    // sums, so each step is a single RDD aggregate whose task results
-    // return 4 longs to the driver — no exchange, no per-step AQE
-    // stage job. Per-row math replicates the former SQL aggregation
-    // exactly ([[rndQ]] = Spark's round(x,0).cast(long); the
-    // λ·p/den·1e6 chain is evaluated in the same operand order).
+    // ONE job per EM step (the trainQualityClfSteps shape): the four
+    // responsibility sums are order-free BIGINT sums, so each step is
+    // a single RDD aggregate whose task results return 4 longs to the
+    // driver — no exchange, no per-step AQE stage job. Per-row math
+    // matches the oracle's SQL iteration exactly ([[rndQ]] = Spark's
+    // round(x,0).cast(long); the λ·p/den·1e6 chain is evaluated in
+    // the same operand order).
     val rdd = scored.select(col("p0"), col("p1"), col("p2"), col("p3"))
       .queryExecution.toRdd
       .map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2),
@@ -989,14 +989,12 @@ object TrainingDataLm {
             l => struct((j * 4 + l).cast("int").as("k"),
               col("w").substr(j + 1, l).as("p")))))).as("c"))
       .select(col("w"), col("c.k").as("k"), col("c.p").as("p"))
-    // Both max-plus DPs ride ONE aggregate fold over the level index
-    // (r12): the former shape unrolled 2·ViterbiMaxW projections whose
-    // Catalyst analysis dominated the query at bench scale; the fold's
-    // tree is constant-size and the recursion lives in the runtime
-    // accumulator array (f_i sits at slot i+1; slot 1 is the f_0 = 0
-    // base). Candidate l > i contributes a NULL that greatest skips —
-    // exactly the former static 1..min(4,i) candidate list; NULL
-    // propagation from unscored pieces is unchanged.
+    // Both max-plus DPs ride ONE aggregate fold over the level index:
+    // the fold's tree is constant-size (unrolled projections would
+    // make Catalyst analysis dominate the query) and the recursion
+    // lives in the runtime accumulator array (f_i sits at slot i+1;
+    // slot 1 is the f_0 = 0 base). Candidate l > i contributes a NULL
+    // that greatest skips, so the candidates are 1..min(4,i).
     val n = length(col("w"))
     // The zero MUST declare its struct fields nullable (slice of an
     // array that also holds a null struct): ArrayAggregate's result
@@ -1108,16 +1106,12 @@ object TrainingDataLm {
             l => struct((j * 4 + l).cast("int").as("k"),
               col("w").substr(j + 1, l).as("p")))))).as("c"))
       .select(col("w"), col("c.k").as("k"), col("c.p").as("p"))
-    // Suffix DP and decode walk each ride ONE aggregate fold (r12):
-    // the former shape unrolled ViterbiMaxW DP projections plus
-    // 3·ViterbiMaxW walk projections, whose Catalyst analysis
-    // dominated every decode at bench scale (x135 runs three). The
-    // fold trees are constant-size; per-row arithmetic, NULL
-    // behaviour, and the leftmost-smallest-piece walk rule are
-    // unchanged, so the recovered pieces are identical. f_t sits at
+    // Suffix DP and decode walk each ride ONE aggregate fold with a
+    // constant-size tree (unrolled projections would make Catalyst
+    // analysis dominate every decode; x135 runs three). f_t sits at
     // accumulator slot t+1 (slot 1 = the f_0 = 0 base); a candidate
-    // l > t contributes a NULL that greatest skips — the former
-    // static 1..min(4,t) list.
+    // l > t contributes a NULL that greatest skips, so the candidates
+    // are 1..min(4,t).
     val faE = aggregate(
       sequence(lit(1), lit(ViterbiMaxW)),
       array(lit(0L)),
@@ -1128,7 +1122,7 @@ object TrainingDataLm {
           .otherwise(lit(NegSq * 32L)))))
     // walk accumulator: (r = chars left, ps = pieces so far); the
     // chosen length is let-bound so the update and the substring read
-    // the same evaluation — the former per-step l/p/r projections.
+    // the same evaluation.
     val walkE = aggregate(
       sequence(lit(1), lit(ViterbiMaxW)),
       struct(n.cast("long").as("r"),

@@ -1016,9 +1016,7 @@ object TrainingDataMixture {
     * after is arithmetic on that tiny relation. */
   val x162NeymanAlloc: Q = (s, d) => {
     val st = Tables.documents(s, d)
-      .select(col("source"),
-        round(qualityScore(col("text"), stopwords) * 1e4, 0).cast("long")
-          .as("q4"))
+      .select(col("source"), qualityQ4(col("text"), stopwords).as("q4"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n"), sum(col("q4")).as("sq"),
         sum(col("q4") * col("q4")).as("sqq"))
@@ -1607,11 +1605,7 @@ object TrainingDataMixture {
       FROM exc e JOIN fin USING (source) ORDER BY e.source"""
     },
     "x162_neyman_alloc" -> s"""
-      WITH q AS (SELECT source, CAST(ROUND($qualityRoundSql * 1e4, 0)
-          AS BIGINT) AS q4
-        FROM (SELECT source, text,
-            regexp_split_to_array(trim(text), '\\s+') AS toks
-          FROM documents)),
+      WITH q AS (SELECT source, $qualityQ4Sql AS q4 FROM documents),
       st AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n,
           CAST(SUM(q4) AS BIGINT) AS sq,
           CAST(SUM(q4 * q4) AS BIGINT) AS sqq
@@ -2009,10 +2003,9 @@ object TrainingDataMixture {
         (CAST(h AS DOUBLE) / 4294967296.0) < (quality * quality) AS selected
       FROM (
         SELECT doc_id, source,
-          $qualityMixSql AS quality,
+          $qualitySql AS quality,
           ${md5Hash32Sql("CAST(doc_id AS VARCHAR)")} AS h
-        FROM (
-          ${qualityRatiosSql("doc_id, source", "documents")}))
+        FROM documents)
       ORDER BY doc_id""",
     "x27_domain_mixture" -> """
       WITH d AS (
@@ -2087,9 +2080,7 @@ object TrainingDataMixture {
       wl AS (SELECT c.doc_id, c.text, d.lang
              FROM corpus c JOIN documents d ON c.doc_id % 1000000 = d.doc_id),
       s1 AS (SELECT * FROM wl WHERE lang = 'en'),
-      qual AS (SELECT doc_id, text, $qualityRoundSql AS q
-        FROM (SELECT doc_id, text,
-                regexp_split_to_array(trim(text), '\\s+') AS toks FROM s1)),
+      qual AS (SELECT doc_id, text, $qualitySql AS q FROM s1),
       s2 AS (SELECT * FROM qual WHERE q >= 0.5),
       s3 AS (SELECT md5(lower(trim(text))) AS fp, MIN(doc_id) AS doc_id
              FROM s2 GROUP BY 1),
@@ -2125,9 +2116,8 @@ object TrainingDataMixture {
       WITH corpus AS (SELECT doc_id, text FROM $corpusSql),
       wl AS (SELECT c.doc_id, c.text, d.lang, d.source
              FROM corpus c JOIN documents d ON c.doc_id % 1000000 = d.doc_id),
-      qual AS (SELECT doc_id, source, lang, text, $qualityRoundSql AS q
-        FROM (SELECT doc_id, source, lang, text,
-                regexp_split_to_array(trim(text), '\\s+') AS toks FROM wl))
+      qual AS (SELECT doc_id, source, lang, text, $qualitySql AS q
+        FROM wl)
       SELECT source,
         CAST(COUNT(*) AS BIGINT) AS bruto,
         CAST(COUNT(CASE WHEN lang = 'en' THEN 1 END) AS BIGINT) AS idioma,

@@ -876,9 +876,7 @@ object TrainingDataQuality {
     val split = (maxId + 1) / 2
     val counts = docs
       .select(
-        least(call_function("div",
-          round(qualityScore(col("text"), stopwords) * 1e4, 0).cast("long"),
-          lit(1000L)), lit(9L)).as("bin"),
+        qualityBin(col("text"), stopwords).as("bin"),
         when(col("doc_id") < split, 1L).otherwise(0L).as("early"))
       .groupBy(col("bin"))
       .agg(sum(col("early")).as("c_early"),
@@ -1024,8 +1022,7 @@ object TrainingDataQuality {
   val x80QualityTrend: Q = (s, d) =>
     Tables.documents(s, d)
       .select(col("source"), col("doc_id").as("x"),
-        round(qualityScore(col("text"), stopwords) * 1e4, 0)
-          .cast("long").as("q4"))
+        qualityQ4(col("text"), stopwords).as("q4"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("x")).as("sx"),
@@ -1062,8 +1059,7 @@ object TrainingDataQuality {
       count(lit(1)).as("n_docs"),
       sum(tokenCount(col("text")).cast("long")).as("n_tok"),
       sum(octet_length(col("text")).cast("long")).as("n_bytes"),
-      sum(round(qualityScore(col("text"), stopwords) * 1e4, 0).cast("long"))
-        .as("sq4"),
+      sum(qualityQ4(col("text"), stopwords)).as("sq4"),
       countDistinct(fingerprint(col("text"))).as("n_unique"),
       sum(graft.dedup.NearDup.md5Hash32(fingerprint(col("text"))))
         .as("content_checksum"))
@@ -1256,8 +1252,7 @@ object TrainingDataQuality {
     // the same histogram re-keyed.
     val hist = Tables.documents(s, d)
       .select(col("source"),
-        round(qualityScore(col("text"), stopwords) * 1e4, 0)
-          .cast("long").as("q4"))
+        qualityQ4(col("text"), stopwords).as("q4"))
       .groupBy(col("source"), col("q4")).agg(count(lit(1)).as("cnt"))
       .localCheckpoint()
     def nearestRankMedianH(h: DataFrame, vc: String): DataFrame = {
@@ -1438,11 +1433,8 @@ object TrainingDataQuality {
   /** Shared by x32 (compute-at-query) and x32b (staged-at-ingest):
     * the two paths must be bit-identical, so one oracle serves both. */
   private val x32OracleSql = s"""
-      WITH scored AS (
-        SELECT doc_id, source,
-          $qualityMixSql AS quality
-        FROM (
-          ${qualityRatiosSql("doc_id, source", "documents")})),
+      WITH scored AS (SELECT doc_id, source, $qualitySql AS quality
+        FROM documents),
       hist AS (
         SELECT source, quality, COUNT(*) AS c
         FROM scored GROUP BY source, quality),
@@ -1457,18 +1449,6 @@ object TrainingDataQuality {
       FROM scored s JOIN corte ON s.source = corte.source
       WHERE s.quality > corte.corte
       ORDER BY s.source, s.doc_id"""
-
-  /** [[graft.text.TextFunctions.qualityScore]] over a row's `text`
-    * and `toks`, rounded to 4 places, with the ratios in parentheses
-    * (x68/x80/x82's form; [[TrainingData.qualityRoundSql]] is the
-    * other). */
-  private def qualityScoreSql: String = """ROUND(LEAST(len(toks) / 50.0, 1.0) * 0.4
-            + (1.0 - LEAST((CAST(length(text) - length(regexp_replace(text,
-                  '[^A-Za-z0-9\s]', '', 'g')) AS DOUBLE)
-                / GREATEST(length(text), 1)) * 5.0, 1.0)) * 0.3
-            + LEAST((CAST(len(list_filter(toks,
-                  t -> t IN ('the','a','of','and'))) AS DOUBLE)
-                / GREATEST(len(toks), 1)) * 10.0, 1.0) * 0.3, 4)"""
 
   /** [[packSegments]] in DuckDB: `d` (non-empty docs with token count
     * and md5 sub-shard), `o` (each doc's start offset in its
@@ -1502,26 +1482,16 @@ object TrainingDataQuality {
             AS BIGINT) AS c_de"""
 
   val oracles: Map[String, String] = Map(
-    "x144_filter_attribution" -> """
-      WITH t AS (SELECT doc_id, lang, text,
-          regexp_split_to_array(trim(text), '\s+') AS toks,
-          list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
+    "x144_filter_attribution" -> s"""
+      WITH t AS (SELECT doc_id, lang, text, ${wsToksSql("text")} AS toks,
+          list_filter(${wsToksSql("lower(text)")},
             w -> w <> '') AS ltoks
         FROM documents),
       fl AS (SELECT
           CASE WHEN lang <> 'en' THEN 1 ELSE 0 END AS f1,
           CASE WHEN len(toks) < 10 THEN 1 ELSE 0 END AS f2,
-          CASE WHEN ROUND(LEAST(len(toks) / 50.0, 1.0) * 0.4
-              + (1.0 - LEAST(CAST(length(text) - length(regexp_replace(text,
-                    '[^A-Za-z0-9\s]', '', 'g')) AS DOUBLE)
-                  / GREATEST(length(text), 1) * 5.0, 1.0)) * 0.3
-              + LEAST(CAST(len(list_filter(toks,
-                    t2 -> t2 IN ('the', 'a', 'of', 'and'))) AS DOUBLE)
-                  / GREATEST(len(toks), 1) * 10.0, 1.0) * 0.3, 4) < 0.5
-            THEN 1 ELSE 0 END AS f3,
-          CASE WHEN CAST(length(text) - length(regexp_replace(text,
-                '[^A-Za-z0-9\s]', '', 'g')) AS DOUBLE)
-              / GREATEST(length(text), 1) > 0.1 THEN 1 ELSE 0 END AS f4,
+          CASE WHEN $qualitySql < 0.5 THEN 1 ELSE 0 END AS f3,
+          CASE WHEN $punctRatioSql > 0.1 THEN 1 ELSE 0 END AS f4,
           CASE WHEN len(list_filter(ltoks,
               w -> w IN ('slow', 'dup', 'hash'))) > 0 THEN 1 ELSE 0 END AS f5
         FROM t),
@@ -1655,11 +1625,8 @@ object TrainingDataQuality {
         CAST(fano_q AS DOUBLE) / 1e4 AS fano
       FROM top ORDER BY fano DESC, w""",
     "x82_quality_percentile" -> s"""
-      WITH q AS (SELECT doc_id, source,
-          $qualityScoreSql AS quality
-        FROM (SELECT doc_id, source, text,
-                regexp_split_to_array(trim(text), '\\s+') AS toks
-              FROM documents))
+      WITH q AS (SELECT doc_id, source, $qualitySql AS quality
+        FROM documents)
       SELECT doc_id, source, quality,
         PERCENT_RANK() OVER (PARTITION BY source ORDER BY quality)
           AS pct_rank,
@@ -1669,16 +1636,8 @@ object TrainingDataQuality {
     "x81_corpus_card" -> s"""
       WITH q AS (SELECT source, lang, text,
           md5(lower(trim(text))) AS f,
-          regexp_split_to_array(trim(text), '\\s+') AS toks,
-          CAST(ROUND(ROUND(LEAST(len(regexp_split_to_array(trim(text),
-                '\\s+')) / 50.0, 1.0) * 0.4
-            + (1.0 - LEAST((CAST(length(text) - length(regexp_replace(text,
-                  '[^A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)
-                / GREATEST(length(text), 1)) * 5.0, 1.0)) * 0.3
-            + LEAST((CAST(len(list_filter(regexp_split_to_array(trim(text),
-                  '\\s+'), t -> t IN ('the','a','of','and'))) AS DOUBLE)
-                / GREATEST(len(regexp_split_to_array(trim(text), '\\s+')), 1))
-              * 10.0, 1.0) * 0.3, 4) * 1e4, 0) AS BIGINT) AS q4
+          ${wsToksSql("text")} AS toks,
+          $qualityQ4Sql AS q4
         FROM documents),
       base AS (SELECT source, COUNT(*) AS n_docs,
           CAST(SUM(len(toks)) AS BIGINT) AS n_tok,
@@ -1709,12 +1668,8 @@ object TrainingDataQuality {
       FROM base b JOIN ent e ON b.source = e.source
       ORDER BY b.source""",
     "x80_quality_trend" -> s"""
-      WITH q AS (SELECT source, doc_id AS x,
-          CAST(ROUND($qualityScoreSql * 1e4, 0)
-            AS BIGINT) AS q4
-        FROM (SELECT source, doc_id, text,
-                regexp_split_to_array(trim(text), '\\s+') AS toks
-              FROM documents)),
+      WITH q AS (SELECT source, doc_id AS x, $qualityQ4Sql AS q4
+        FROM documents),
       m AS (SELECT source, COUNT(*) AS n, SUM(x) AS sx,
           SUM(x * x) AS sxx, SUM(q4) AS sy, SUM(x * q4) AS sxy
         FROM q GROUP BY source),
@@ -1804,11 +1759,7 @@ object TrainingDataQuality {
       FROM agg ORDER BY doc_id""",
     "x68_quality_psi" -> s"""
       WITH sp AS (SELECT (MAX(doc_id) + 1) // 2 AS split FROM documents),
-      qual AS (SELECT doc_id,
-          $qualityScoreSql AS quality
-        FROM (SELECT doc_id, text,
-                regexp_split_to_array(trim(text), '\\s+') AS toks
-              FROM documents)),
+      qual AS (SELECT doc_id, $qualitySql AS quality FROM documents),
       binned AS (SELECT
           LEAST(CAST(ROUND(quality * 1e4, 0) AS BIGINT) // 1000, 9) AS bin,
           CASE WHEN doc_id < (SELECT split FROM sp) THEN 1 ELSE 0 END AS early
@@ -1834,13 +1785,7 @@ object TrainingDataQuality {
         CAST(SUM(contrib_q) OVER () AS DOUBLE) / 1e8 AS psi
       FROM contrib ORDER BY bin""",
     "x130_quality_mad" -> s"""
-      WITH q AS (
-        SELECT source, CAST(ROUND(quality * 1e4, 0) AS BIGINT) AS q4
-        FROM (
-          SELECT source,
-            $qualityMixSql AS quality
-          FROM (
-            ${qualityRatiosSql("source", "documents")}))),
+      WITH q AS (SELECT source, $qualityQ4Sql AS q4 FROM documents),
       h1 AS (SELECT source, q4, CAST(COUNT(*) AS BIGINT) AS cnt
         FROM q GROUP BY 1, 2),
       t1 AS (SELECT source, CAST(SUM(cnt) AS BIGINT) AS n
@@ -2262,13 +2207,11 @@ object TrainingDataQuality {
       FROM ranked WHERE rk <= 3
       ORDER BY doc_id, rk""",
     "x8_quality_score" -> s"""
-      SELECT doc_id, CAST(n_tok AS INT) AS n_tok,
-        ROUND(punct_ratio, 4) AS punct_ratio,
-        ROUND(stop_ratio, 4) AS stop_ratio,
-        $qualityMixSql AS quality
-      FROM (
-        ${qualityRatiosSql("doc_id", "documents")})
-      ORDER BY doc_id""",
+      SELECT doc_id, CAST(len(${wsToksSql("text")}) AS INT) AS n_tok,
+        ROUND($punctRatioSql, 4) AS punct_ratio,
+        ROUND($stopRatioSql, 4) AS stop_ratio,
+        $qualitySql AS quality
+      FROM documents ORDER BY doc_id""",
     "x7_lang_id" -> """
       SELECT doc_id,
         CASE WHEN s_en = best AND s_en > 0 THEN 'en'

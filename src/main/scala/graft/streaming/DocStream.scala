@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import graft.text.TextFunctions.{fingerprint, qualityScore, redactPii, tokenCount}
+import graft.text.TextFunctions.{fingerprint, qualityBin, qualityScore, redactPii, tokenCount}
 
 /** Streaming document ingestion for the training-data pipeline: the
   * x22 incremental-dedup semantics on an UNBOUNDED stream. New docs
@@ -199,15 +199,6 @@ object DocStream {
         size(col("sel")).cast("long").as("n_sel"), col("fps"))
       .write.mode("append").parquet(storeDir)
   }
-
-  /** Quality decile on the integer-1e4 score representation — the
-    * x68 binning (pure integer: no engine or batch/stream replay can
-    * disagree on a bin edge). */
-  def qualityBin(text: org.apache.spark.sql.Column,
-      stopwords: Seq[String]): org.apache.spark.sql.Column =
-    least(call_function("div",
-      round(qualityScore(text, stopwords) * 1e4, 0).cast("long"),
-      lit(1000L)), lit(9L))
 
   /** Streaming half of the quality-drift monitor: per-event-time-
     * window quality-decile counts — ONE watermarked windowed

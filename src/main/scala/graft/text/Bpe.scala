@@ -203,8 +203,7 @@ object Bpe {
   /** One greedy merge level over a bound syms VALUE, with the merge
     * pair (a, b) as column expressions — used inside the
     * [[segmentFold]] aggregate, where the level's intermediates are
-    * let-bound ([[let1]]) exactly like the former per-level
-    * projections bound them, so nothing is re-evaluated.
+    * let-bound ([[let1]]), so nothing is re-evaluated.
     *
     * Closed-form greedy-left-to-right via run parity: position i
     * matches iff (s[i], s[i+1]) = (a, b); a match is SELECTED iff the
@@ -230,14 +229,11 @@ object Bpe {
               .otherwise(element_at(s, i))), x => x.isNotNull)))
 
   /** Replay `merges` over an initial symbol array as ONE aggregate
-    * fold against the literal merge table (optimization r12): the
-    * former shape chained 3 projections PER MERGE — a 150-projection
-    * plan for a 50-merge table whose Catalyst analysis alone measured
-    * ~3.4 s per segmentation at sf0.1 (0 jobs — pure planning). The
-    * fold's expression tree is constant-size regardless of merge
-    * count; the per-row work (and every produced symbol array) is
-    * identical, the recursion now lives in the runtime accumulator
-    * instead of the plan. */
+    * fold against the literal merge table: the fold's expression tree
+    * is constant-size regardless of merge count (a projection per
+    * merge would cost seconds of Catalyst analysis per segmentation),
+    * and the recursion lives in the runtime accumulator instead of
+    * the plan. */
   private def segmentFold(s0: Column, merges: Seq[(String, String)]): Column =
     if (merges.isEmpty) s0
     else aggregate(

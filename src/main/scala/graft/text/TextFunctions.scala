@@ -66,15 +66,30 @@ object TextFunctions {
     (length(text) - length(regexp_replace(text, "[^A-Za-z0-9\\s]", "")))
       .cast("double") / greatest(length(text), lit(1))
 
-  /** Composite quality score ∈ [0,1]: length band + low punctuation +
-    * stopword presence (the reference's quality gates are ad-hoc
-    * per-pipeline; this packages the same signals). */
+  /** The three quality signals, each ∈ [0,1]: length band (50 tokens
+    * saturate), low punctuation and stopword presence. */
+  def qualitySignals(text: Column, stopwords: Seq[String]): Seq[Column] = Seq(
+    least(tokenCount(text).cast("double") / 50.0, lit(1.0)),
+    lit(1.0) - least(punctRatio(text) * 5.0, lit(1.0)),
+    least(stopwordRatio(text, stopwords) * 10.0, lit(1.0)))
+
+  /** Composite quality score ∈ [0,1], the 0.4/0.3/0.3 mix of
+    * [[qualitySignals]] rounded to 4 places (the reference's quality
+    * gates are ad-hoc per-pipeline; this packages the same signals). */
   def qualityScore(text: Column, stopwords: Seq[String]): Column = {
-    val lenScore = least(tokenCount(text).cast("double") / 50.0, lit(1.0))
-    val punctOk = lit(1.0) - least(punctRatio(text) * 5.0, lit(1.0))
-    val stopOk = least(stopwordRatio(text, stopwords) * 10.0, lit(1.0))
+    val Seq(lenScore, punctOk, stopOk) = qualitySignals(text, stopwords)
     round(lenScore * 0.4 + punctOk * 0.3 + stopOk * 0.3, 4)
   }
+
+  /** [[qualityScore]] as an exact integer in 1e-4 units. */
+  def qualityQ4(text: Column, stopwords: Seq[String]): Column =
+    round(qualityScore(text, stopwords) * 1e4, 0).cast("long")
+
+  /** Quality decile, [[qualityQ4]] div 1000 capped at 9 (x68's bins and
+    * the streaming drift monitor's): pure integer, so no engine or
+    * batch/stream replay can disagree on a bin edge. */
+  def qualityBin(text: Column, stopwords: Seq[String]): Column =
+    least(call_function("div", qualityQ4(text, stopwords), lit(1000L)), lit(9L))
 
   /** Marker-word language score: fraction of tokens in the marker set. */
   def markerScore(text: Column, markers: Seq[String]): Column = {

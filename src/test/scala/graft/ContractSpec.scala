@@ -17,6 +17,8 @@ class ContractSpec extends AnyFunSuite {
       Map("a1" -> 1, "b1" -> 2))
     assert(SparkEntry.queries.size == 329)
     assert(SparkEntry.oracleSql.size == 329)
+    // a mistyped oracle key would leave its query with no oracle
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
   }
 
   test("Bench: a query that throws is an error, never a timing") {

@@ -270,7 +270,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamCounts.exceptAll(batchCounts).count() == 0)
     // reference histogram = the corpus snapshot's own bins; PSI of the
     // corpus windows against their own corpus stays calm
-    val ref = docs.select(DocStream.qualityBin(col("text"), stop).as("bin"))
+    val ref = docs.select(graft.text.TextFunctions.qualityBin(col("text"), stop).as("bin"))
       .groupBy("bin").count().collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toSeq
     val psiStream = DocStream.qualityPsi(streamCounts, ref)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{HashedBow, TextHashExpressions}
 import graft.queries.TrainingDataClassifier
-import graft.text.TextFunctions.wsTokens
+import graft.text.TextFunctions.{qualityScore, qualitySignals, wsTokens}
 
 /** The native md5-prefix hash and the hashed bag-of-words kernel,
   * each against the Column-expression shape it replaced (kept here
@@ -83,6 +83,19 @@ class TextHashSpec extends AnyFunSuite {
         assert(xs.length == 68)
         assert(xs.take(64) == ref(id), s"doc $id")
       }
+    }
+    // xs(64..66) are the shared quality signals and y is the score's
+    // 0.5 gate, on the same edge-case docs
+    val stop = graft.queries.TrainingData.stopwords
+    val sig = edgeDocs.select(col("doc_id") +: qualitySignals(col("text"), stop) :+
+        (qualityScore(col("text"), stop) >= 0.5).cast("long"): _*)
+      .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+    val feats = TrainingDataClassifier.clfFeatures(edgeDocs).collect()
+    assert(feats.nonEmpty)
+    for (r <- feats) {
+      val (xs, want) = (r.getSeq[Double](2), sig(r.getLong(0)))
+      assert(xs.slice(64, 67) == want.take(3), s"doc ${r.getLong(0)}")
+      assert(r.getLong(1) == want(3), s"doc ${r.getLong(0)}")
     }
     // one projection over the scan: the kernel runs once per row, not
     // once more in a pushed-down filter
