@@ -3,11 +3,9 @@ package graft.ml
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-/** The DISTRIBUTED per-group model fit — the scale path GroupForest's
-  * driver loop documents but cannot take (`ml/GroupForest` caps at
-  * [[GroupForest.MaxDriverLoopGroups]]): `groupByKey(...).mapGroups`
-  * ships each group's series to ONE executor task and fits a local
-  * learner there, so 10^5 groups parallelize across the cluster with
+/** The DISTRIBUTED per-group model fit, with no driver loop over the
+  * groups: `groupByKey(...).mapGroups` ships each group's series to
+  * ONE executor task and fits a local learner there, so 10^5 groups parallelize across the cluster with
   * zero driver involvement — the standard Spark shape for
   * many-small-models (one shuffle on the group key, then pure local
   * compute).

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{Store, Tables}
 import graft.text.TextFunctions._
@@ -98,9 +99,8 @@ object TrainingData {
       ensureDHashStore, ensureDedupLabels, ensureIvfPqStore,
       ensureIvfBaseStore, ensureIvfPqBase,
       ensurePlantedFixtures,
-      ensureOpqPqStore, ensureClfWeights,
-      ensureWinnowStore, ensureClfTemp,
-      ensureClfTrajectory).foreach(_(s, d))
+      ensureOpqPqStore, ensureClfModel,
+      ensureWinnowStore).foreach(_(s, d))
   }
 
   /** Stage the synthetic failure-mode fixtures that rounds ≤8 planted
@@ -232,12 +232,16 @@ object TrainingData {
     """CAST(length(text) - length(regexp_replace(text,
             '[^A-Za-z0-9\s]', '', 'g')) AS DOUBLE) / GREATEST(length(text), 1)"""
 
+  /** The [[stopwords]] as DuckDB string literals, comma-separated. */
+  private[queries] def stopwordsSql: String =
+    stopwords.map(w => s"'$w'").mkString(", ")
+
   /** [[graft.text.TextFunctions.stopwordRatio]] of a row's `text` over
     * the [[stopwords]] in DuckDB. */
   private[queries] def stopRatioSql: String = {
     val toks = wsToksSql("text")
     s"""CAST(len(list_filter($toks,
-            t -> t IN (${stopwords.map(w => s"'$w'").mkString(", ")}))) AS DOUBLE)
+            t -> t IN ($stopwordsSql))) AS DOUBLE)
             / GREATEST(len($toks), 1)"""
   }
 
@@ -259,6 +263,32 @@ object TrainingData {
   /** [[graft.text.TextFunctions.qualityQ4]] of a row's `text` in DuckDB. */
   private[queries] def qualityQ4Sql: String =
     s"CAST(ROUND($qualitySql * 1e4, 0) AS BIGINT)"
+
+  /** The global nearest-rank cut over `df`'s column `v`: the least
+    * value whose running count `cum` over the (v, cnt) histogram
+    * meets `cond(cum, n)`, n the row count, as the one-row `name`.
+    * The histogram has one row per distinct value, never per doc (the
+    * x32/x130 method); [[cutCtes]] is the DuckDB mirror. */
+  private[queries] def nearestRankCut(df: DataFrame, v: String, name: String)(
+      cond: (Column, Column) => Column): DataFrame = {
+    val hist = df.groupBy(col(v)).agg(count(lit(1)).as("cnt"))
+    val tot = hist.agg(sum(col("cnt")).as("n"))
+    hist
+      .withColumn("cum", sum(col("cnt")).over(Window.orderBy(col(v))))
+      .crossJoin(broadcast(tot))
+      .filter(cond(col("cum"), col("n")))
+      .agg(min(col(v)).as(name))
+  }
+
+  /** [[nearestRankCut]] over `sc`'s column `v` in DuckDB: its histogram
+    * `h`, total `tt`, cumulative counts `c` and `cut(<name>)`, the least
+    * value whose cumulative count satisfies `cond`. */
+  private[queries] def cutCtes(v: String, name: String, cond: String): String =
+    s"""h AS (SELECT $v, CAST(COUNT(*) AS BIGINT) AS cnt FROM sc GROUP BY $v),
+      tt AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n FROM h),
+      c AS (SELECT $v, CAST(SUM(cnt) OVER (ORDER BY $v) AS BIGINT) AS cum
+        FROM h),
+      cut AS (SELECT MIN($v) AS $name FROM c, tt WHERE $cond)"""
 
   /** Deterministic hash sub-shard in [0, n): the first 16 bits of
     * md5(doc_id), reproducible bit-for-bit in DuckDB as

@@ -10,50 +10,79 @@ import graft.queries.TrainingData._
 /** The quality classifier: feature hashing, the gradient-descent
   * trainer with its trajectory, calibration and temperature scaling,
   * and the queries that consume its scores (filtering, ROC, label
-  * noise, cartography, influence). Stores: the trained weights, the
-  * temperature grid and the training trajectory. */
+  * noise, cartography, influence). One store holds the trained
+  * weights, the training trajectory and the fitted temperature. */
 object TrainingDataClassifier {
 
-  /** The persisted model registry for x108's trained quality
-    * classifier: 68 (bucket, weight) rows, trained once per fixture
-    * fingerprint and read back by every downstream consumer (x118's
-    * calibration audit) — the x98 staged-read contract applied to
-    * MODEL artifacts instead of labels. Production pipelines never
-    * retrain a filter model per query; they score against the
-    * registry copy. First caller pays the 20 GD jobs;
-    * [[TrainingData.prebuildCaches]] pays it in Bench's untimed warmup. */
-  private[graft] def ensureClfWeights(s: SparkSession, d: String): String =
-    Store.materialize("clfw", "v1", d, "documents") { path =>
+  /** The persisted quality-classifier store: x108's model, trained once
+    * per fixture fingerprint and read back by every consumer, so no
+    * query retrains it (the x98 staged-read contract applied to MODEL
+    * artifacts; production scores against the registry copy). One
+    * feature build and one 20-step trainer run write three tables:
+    * - `traj` (step, bucket, wb): the weights after each GD step,
+    *   20×68 rows (x157, x158, x159, x168);
+    * - `w` (bucket, wb): the 68 weights of the last step, the serving
+    *   registry (x118, x122, x131, …, the streaming gate);
+    * - `temp` (tq, snll): the one-row temperature fitted on `w` by
+    *   [[clfTempGrid]]'s argmin (x136) — serving needs both numbers:
+    *   production scores with σ(z/T*), never refits per query.
+    * [[TrainingData.prebuildCaches]] pays the build in Bench's untimed
+    * warmup; [[clfTable]] reads a table. */
+  private[graft] def ensureClfModel(s: SparkSession, d: String): String =
+    Store.materialize("clf", "v1", d, "documents") { path =>
       val (tf, n) = qualityClfTf(s, d)
-      val w = trainQualityClf(tf, n)
-      s.createDataFrame(
-          w.toSeq.zipWithIndex.map { case (v, b) => (b.toLong, v) })
+      val steps = trainQualityClfSteps(tf, n)
+      s.createDataFrame(steps.zipWithIndex.flatMap { case (w, i) =>
+          w.toSeq.zipWithIndex.map { case (v, b) => ((i + 1).toLong, b.toLong, v) }
+        })
+        .toDF("step", "bucket", "wb")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/traj")
+      val wdf = s.createDataFrame(
+          steps.last.toSeq.zipWithIndex.map { case (v, b) => (b.toLong, v) })
         .toDF("bucket", "wb")
-        .coalesce(1).write.mode("overwrite").parquet(path)
+      wdf.coalesce(1).write.mode("overwrite").parquet(s"$path/w")
+      clfTempGrid(s, d, wdf)
+        .orderBy(col("snll"), col("tq")).limit(1)
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/temp")
     }
 
-  /** σ(z/T) quantized 1e-6 after evaluation, for a 1e9-quantized
-    * logit `zq` and a 1e-2-quantized temperature `tq` (T = tq/100) —
-    * the x39 transcendental rule applied to the calibrated score.
-    * zq/1e9, tq/100, and their quotient are each one correctly-
-    * rounded IEEE division on exact integers, so both engines feed
-    * exp() the identical double. */
-  private def sigmaT(zq: Column, tq: Column): Column =
-    round((lit(1.0) / (lit(1.0) + exp(-((zq.cast("double") / 1e9)
-      / (tq.cast("double") / lit(100.0)))))) * 1e6, 0).cast("long")
+  /** Table `t` (`w`, `traj` or `temp`) of [[ensureClfModel]]'s store. */
+  private[graft] def clfTable(s: SparkSession, d: String, t: String): DataFrame =
+    s.read.parquet(s"${ensureClfModel(s, d)}/$t")
 
-  /** The full (tq, snll) temperature grid on x36's val split — the
-    * scan [[ensureClfTemp]] argmins over, exposed whole so EngineSpec
-    * can pin the floor (T = 1 is on the grid) without re-deriving
-    * the quantization chain. */
-  private[graft] def clfTempGrid(s: SparkSession, d: String): DataFrame = {
-    val wdf = s.read.parquet(ensureClfWeights(s, d))
+  /** σ of the logit `z`, quantized 1e-6 after evaluation — the one
+    * transcendental seam every scorer shares (the x39 rule; the oracle
+    * mirror is `clfProbSql`). Callers pass a 1e9-quantized logit as
+    * zq/1e9 ([[pqOf]]) or, temperature-scaled, as (zq/1e9)/(tq/100)
+    * ([[tempLogit]]); each division is one correctly-rounded IEEE
+    * division on exact integers, so both engines feed exp() the
+    * identical double. */
+  private def clfProb(z: Column): Column =
+    round((lit(1.0) / (lit(1.0) + exp(-z))) * 1e6, 0).cast("long")
+
+  /** A row's 1e9-quantized logit `zq` over its 1e-2-quantized
+    * temperature `tq` (T = tq/100), the oracle's `tempLogitSql`. */
+  private def tempLogit: Column =
+    (col("zq").cast("double") / 1e9) / (col("tq").cast("double") / lit(100.0))
+
+  /** The full (tq, snll) temperature grid of the weights `wdf` on x36's
+    * val split: T ∈ {0.25 … 4.00} step 0.05, each candidate scored by
+    * the 1e-6-quantized negative log-likelihood of the 1e-6-quantized
+    * σ(z/T) (both transcendentals quantized after evaluation, so the
+    * scan is an integer argmin both engines replay bit-for-bit; ties
+    * take the smaller T) — the 1-parameter post-hoc calibration of Guo
+    * et al. 2017. [[ensureClfModel]] stores its argmin; exposed whole so
+    * EngineSpec can pin the floor (T = 1 is on the grid, so the fitted
+    * NLL never exceeds the uncalibrated one). Scale: one val-split
+    * scoring scan × a 76-row broadcast grid collapsing onto 76 rows —
+    * the x111 bounded-grid shape. */
+  private[graft] def clfTempGrid(s: SparkSession, d: String,
+      wdf: DataFrame): DataFrame = {
     val valDocs = Tables.documents(s, d)
       .filter(splitBalde(col("doc_id")) >= 90 &&
         splitBalde(col("doc_id")) < 95)
     val grid = s.range(25, 401, 5).select(col("id").as("tq"))
-    val pc = least(greatest(sigmaT(col("zq"), col("tq")), lit(1L)),
-      lit(999999L))
+    val pc = least(greatest(clfProb(tempLogit), lit(1L)), lit(999999L))
     clfLogits(clfFeatures(valDocs), wdf)
       .crossJoin(broadcast(grid))
       .withColumn("nq", round(-log(
@@ -61,28 +90,6 @@ object TrainingDataClassifier {
           .cast("double") / 1e6) * 1e6, 0).cast("long"))
       .groupBy(col("tq")).agg(sum(col("nq")).as("snll"))
   }
-
-  /** The persisted temperature for x108's classifier (x136): the
-    * 1-parameter post-hoc calibration (Guo et al. 2017) fitted on
-    * x36's VAL split by a quantized NLL grid scan — T ∈ {0.25 …
-    * 4.00} step 0.05, each candidate scored by the 1e-6-quantized
-    * negative log-likelihood of the 1e-6-quantized σ(z/T) (both
-    * transcendentals quantized after evaluation, so the scan is an
-    * integer argmin both engines replay bit-for-bit; ties take the
-    * smaller T). T = 1 sits on the grid, so the fitted NLL can never
-    * exceed the uncalibrated one — the acceptance floor EngineSpec
-    * pins. Stored beside the weight registry ([[ensureClfWeights]])
-    * because serving needs BOTH numbers: production scores with
-    * σ(z/T*), never refits per query. Scale: one val-split scoring
-    * scan × a 76-row broadcast grid collapsing onto 76 rows — the
-    * x111 bounded-grid shape. First caller pays; [[TrainingData.prebuildCaches]]
-    * pays it in Bench's untimed warmup. */
-  private[graft] def ensureClfTemp(s: SparkSession, d: String): String =
-    Store.materialize("clft", "v1", d, "documents") { path =>
-      clfTempGrid(s, d)
-        .orderBy(col("snll"), col("tq")).limit(1)
-        .coalesce(1).write.mode("overwrite").parquet(path)
-    }
 
   /** X173: gradient-noise scale (McCandlish et al. 2018, "An
     * empirical model of large-batch training") — the number that
@@ -103,7 +110,7 @@ object TrainingDataClassifier {
     * dim-keyed map-side-combinable sums → a 68-row rollup; the final
     * three divisions run driver-side on two BigInt scalars. */
   val x173GradientNoise: Q = (s, d) => {
-    val wdf = s.read.parquet(ensureClfWeights(s, d))
+    val wdf = clfTable(s, d, "w")
     gradientNoiseOn(s, clfTf1(s, d), wdf)
   }
 
@@ -225,7 +232,7 @@ object TrainingDataClassifier {
     * flag decision is engine-exact. One scoring scan, two global
     * means, one per-source aggregation. */
   val x142LabelNoise: Q = (s, d) => {
-    val wdf = s.read.parquet(ensureClfWeights(s, d))
+    val wdf = clfTable(s, d, "w")
     val docs = Tables.documents(s, d)
     val scored = clfScores(clfFeatures(docs), wdf)
       .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
@@ -268,7 +275,7 @@ object TrainingDataClassifier {
     * training buys tokens). One scoring pass + one histogram + one
     * broadcast-cut aggregation. */
   val x131AnnealSelect: Q = (s, d) => {
-    val wdf = s.read.parquet(ensureClfWeights(s, d))
+    val wdf = clfTable(s, d, "w")
     val docs = Tables.documents(s, d)
     // checkpointed once: the scored table feeds the cut histogram AND
     // the per-source aggregation — without the pin the feature-build
@@ -277,13 +284,8 @@ object TrainingDataClassifier {
       .join(docs.select(col("doc_id"), col("source"),
         tokenCount(col("text")).cast("long").as("n_tok")), Seq("doc_id"))
       .localCheckpoint()
-    val hist = scored.groupBy(col("pq")).agg(count(lit(1)).as("cnt"))
-    val tot = hist.agg(sum(col("cnt")).as("n"))
-    val cut = hist
-      .withColumn("cum", sum(col("cnt")).over(Window.orderBy(col("pq"))))
-      .crossJoin(broadcast(tot))
-      .filter(col("cum") * 10L >= col("n") * 9L)
-      .agg(min(col("pq")).as("cut90"))
+    val cut = nearestRankCut(scored, "pq", "cut90")((cum, n) =>
+      cum * 10L >= n * 9L)
     scored.crossJoin(broadcast(cut))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
@@ -303,7 +305,7 @@ object TrainingDataClassifier {
   /** X122: quality-classifier filter APPLICATION — the production
     * gate itself: x108 trains the model, x118 calibrates it, this
     * runs it — every doc scored under the REGISTRY weights
-    * ([[ensureClfWeights]], never a retrain) and kept iff p ≥ 0.5,
+    * ([[ensureClfModel]], never a retrain) and kept iff p ≥ 0.5,
     * reported per source as the kept/total funnel plus the
     * model-vs-rule-gate agreement rate (the distillation-fidelity
     * number that decides when the cheap model can replace the rule
@@ -312,7 +314,7 @@ object TrainingDataClassifier {
     * broadcast join and doc- then source-keyed map-side-combinable
     * aggregation. Ratios pure-BIGINT [[intRoundHalfAway]]. */
   val x122ClfFilter: Q = (s, d) => {
-    val wdf = s.read.parquet(ensureClfWeights(s, d))
+    val wdf = clfTable(s, d, "w")
     val tf = clfTf1(s, d)
     clfScores(tf, wdf)
       .join(Tables.documents(s, d).select(col("doc_id"), col("source")),
@@ -348,7 +350,7 @@ object TrainingDataClassifier {
     * — never retrains (the x98 staged contract); the oracle retrains
     * from scratch, re-proving the registry every run. */
   val x150El2nPrune: Q = (s, d) => {
-    val wdf = s.read.parquet(ensureClfWeights(s, d))
+    val wdf = clfTable(s, d, "w")
     val (tf, _) = qualityClfTf(s, d)
     // checkpointed once: feeds the cut histogram AND the rollup
     val scored = clfScores(tf, wdf)
@@ -356,13 +358,8 @@ object TrainingDataClassifier {
       .join(Tables.documents(s, d).select(col("doc_id"), col("source")),
         Seq("doc_id"))
       .localCheckpoint()
-    val hist = scored.groupBy(col("el2n_q")).agg(count(lit(1)).as("cnt"))
-    val tot = hist.agg(sum(col("cnt")).as("n"))
-    val cut = hist
-      .withColumn("cum", sum(col("cnt")).over(Window.orderBy(col("el2n_q"))))
-      .crossJoin(broadcast(tot))
-      .filter(col("cum") * 5L >= col("n"))
-      .agg(min(col("el2n_q")).as("cut20"))
+    val cut = nearestRankCut(scored, "el2n_q", "cut20")((cum, n) =>
+      cum * 5L >= n)
     scored.crossJoin(broadcast(cut))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
@@ -388,10 +385,10 @@ object TrainingDataClassifier {
     * dynamics") — the one consumer of a training TRAJECTORY rather
     * than a final model: score every doc's true-label probability
     * under each of the 20 persisted GD snapshots
-    * ([[ensureClfTrajectory]] — the same trainer run as the registry,
-    * snapshots kept), then per doc confidence = mean over steps and
-    * variability = population std; the (conf, var) map splits the
-    * corpus into easy-to-learn (high conf, low var — prunable, cf.
+    * ([[ensureClfModel]]'s `traj` — the same trainer run as the
+    * registry, snapshots kept), then per doc confidence = mean over
+    * steps and variability = population std; the (conf, var) map
+    * splits the corpus into easy-to-learn (high conf, low var — prunable, cf.
     * x150), hard-to-learn (low conf, low var — the label-noise
     * region x142 flags), and ambiguous (high var — the examples
     * worth keeping). Per (region, label) rollup. Determinism: probs
@@ -413,7 +410,7 @@ object TrainingDataClassifier {
           .as("mean_vari"))
       .orderBy(col("region"), col("y"))
 
-  /** Per-doc training dynamics over the 20 [[ensureClfTrajectory]]
+  /** Per-doc training dynamics over the 20 [[ensureClfModel]] `traj`
     * snapshots, folded inside the task ([[trajPqRows]]) on each step's
     * true-label probability ptq (1e-6 units): (doc_id, y, conf_q =
     * mean ptq, vari_q = population std of ptq, n_ok = steps with
@@ -421,7 +418,7 @@ object TrainingDataClassifier {
     * consecutive steps, region = the cartography map of (conf_q,
     * vari_q)) — x157, x158 and x168's shared input. */
   private def trajDynamics(s: SparkSession, d: String): DataFrame = {
-    val traj = s.read.parquet(ensureClfTrajectory(s, d))
+    val traj = clfTable(s, d, "traj")
     val (tf, _) = qualityClfTf(s, d)
     import s.implicits._
     trajPqRows(tf, traj).map { case (docId, y, _, pqs) =>
@@ -556,7 +553,7 @@ object TrainingDataClassifier {
     * and the feature mass ‖x‖² folded inside the task (x157's shape);
     * nothing pairwise, only TakeOrdered(20) shuffles. */
   val x159TracinSelf: Q = (s, d) => {
-    val traj = s.read.parquet(ensureClfTrajectory(s, d))
+    val traj = clfTable(s, d, "traj")
     val (tf, _) = qualityClfTf(s, d)
     import s.implicits._
     trajPqRows(tf, traj).map { case (docId, y, xs, pqs) =>
@@ -592,7 +589,7 @@ object TrainingDataClassifier {
     * (p_e = 1 leaves it undefined — the documented degenerate case).
     * One registry-scoring scan onto |sources| rows. */
   val x163CohenKappa: Q = (s, d) => {
-    val wdf = s.read.parquet(ensureClfWeights(s, d))
+    val wdf = clfTable(s, d, "w")
     val tf = clfTf1(s, d)
     val ct = clfScores(tf, wdf)
       .join(Tables.documents(s, d).select(col("doc_id"), col("source")),
@@ -629,7 +626,7 @@ object TrainingDataClassifier {
     * replays every bound and pins lb ≤ p̂ (the correction only ever
     * shrinks) plus the small-sample demotion it exists for. */
   val x164WilsonBound: Q = (s, d) => {
-    val wdf = s.read.parquet(ensureClfWeights(s, d))
+    val wdf = clfTable(s, d, "w")
     val tf = clfTf1(s, d)
     val ct = clfScores(tf, wdf)
       .join(Tables.documents(s, d).select(col("doc_id"), col("source")),
@@ -730,11 +727,8 @@ object TrainingDataClassifier {
       zip_with(ws, xs, (w, x) => round(w * x * lit(1e9), 0).cast("long")),
       lit(0L), (acc, v) => acc + v)
 
-  /** σ of a 1e9-quantized logit, 1e-6-quantized after evaluation —
-    * the one transcendental seam every scorer shares. */
-  private def pqOf(zq: Column): Column =
-    round((lit(1.0) / (lit(1.0)
-      + exp(-(zq.cast("double") / 1e9)))) * 1e6, 0).cast("long")
+  /** [[clfProb]] of a 1e9-quantized logit `zq`. */
+  private def pqOf(zq: Column): Column = clfProb(zq.cast("double") / 1e9)
 
   /** The persisted per-step trajectory (step, bucket, wb) pivoted to
     * ONE broadcastable row — snaps = array of (step, ws) in step
@@ -779,12 +773,12 @@ object TrainingDataClassifier {
     * feature row (a Catalyst higher-order function never enters
     * whole-stage codegen). The integers equal the column chain's:
     * [[rndQ]] IS Spark's round(x,0).cast(long) (EngineSpec-pinned),
-    * exp is the same java.lang.Math.exp codegen calls, operand order
-    * ws(b)·xs(b)·1e9 and the σ chain match [[zqOf]]/[[pqOf]]
-    * verbatim, and the fold runs left-to-right like `aggregate`. Emits (doc_id, y, xs, pqs) with pqs the
-    * step-ordered 1e-6-quantized P(y=1) per snapshot; the TRUE-LABEL
-    * ptq of [[trajPtqs]] is (y==1 ? pq : 1e6−pq), applied by each
-    * consumer. A ws/xs width mismatch fails the task ([[denseXs]]). */
+    * exp is the same java.lang.Math.exp codegen calls, and
+    * [[logitQ]]/[[sigmaQ]] keep [[zqOf]]/[[pqOf]]'s operand order and
+    * fold left-to-right like `aggregate`. Emits (doc_id, y, xs, pqs)
+    * with pqs the step-ordered 1e-6-quantized P(y=1) per snapshot;
+    * the TRUE-LABEL ptq of [[trajPtqs]] is (y==1 ? pq : 1e6−pq),
+    * applied by each consumer. A ws/xs width mismatch fails the task ([[denseXs]]). */
   private[graft] def trajPqRows(tf: DataFrame, traj: DataFrame)
       : org.apache.spark.rdd.RDD[(Long, Long, Array[Double], Array[Long])] = {
     val snaps = trajSnapsOf(traj)
@@ -796,12 +790,7 @@ object TrainingDataClassifier {
         var i = 0
         while (i < snaps.length) {
           val ws = snaps(i)
-          denseXs(xs, ws.length)
-          var zq = 0L
-          var b = 0
-          while (b < ws.length) { zq += rndQ(ws(b) * xs(b) * 1e9); b += 1 }
-          pqs(i) = rndQ((1.0 / (1.0
-            + math.exp(-(zq.toDouble / 1e9)))) * 1e6)
+          pqs(i) = sigmaQ(logitQ(ws, denseXs(xs, ws.length)))
           i += 1
         }
         (docId, y, xs, pqs)
@@ -814,6 +803,19 @@ object TrainingDataClassifier {
     require(xs.length == width, s"feature row xs is ${xs.length} wide, weights are $width wide")
     xs
   }
+
+  /** [[zqOf]] task-side: Σ_b [[rndQ]](ws(b)·xs(b)·1e9), left to right —
+    * the logit the trainer's GD fold and [[trajPqRows]] share. */
+  private def logitQ(ws: Array[Double], xs: Array[Double]): Long = {
+    var zq = 0L
+    var b = 0
+    while (b < ws.length) { zq += rndQ(ws(b) * xs(b) * 1e9); b += 1 }
+    zq
+  }
+
+  /** [[pqOf]] task-side: σ of the 1e9-quantized logit `zq`, 1e-6-quantized. */
+  private def sigmaQ(zq: Long): Long =
+    rndQ((1.0 / (1.0 + math.exp(-(zq.toDouble / 1e9)))) * 1e6)
 
   /** Registry-weight LOGITS of a feature table under the trainer's
     * exact quantization contract (1e9-quantized): (doc_id, y, zq).
@@ -831,10 +833,7 @@ object TrainingDataClassifier {
     * and the streaming gate — one scoring definition, no drift. */
   private[graft] def clfScores(tf: DataFrame, wdf: DataFrame): DataFrame =
     clfLogits(tf, wdf)
-      .select(col("doc_id"), col("y"),
-        round((lit(1.0) / (lit(1.0)
-          + exp(-(col("zq").cast("double") / 1e9)))) * 1e6, 0)
-          .cast("long").as("pq"))
+      .select(col("doc_id"), col("y"), pqOf(col("zq")).as("pq"))
 
   /** x108's trainer: full-batch logistic-regression gradient descent
     * over the dense feature table — `iters` steps at learning rate
@@ -875,12 +874,8 @@ object TrainingDataClassifier {
       val wl = w
       val g = rdd.aggregate(new Array[Long](dFeat))((acc, row) => {
         val (y, xs) = row
-        var zq = 0L
+        val pmy = sigmaQ(logitQ(wl, xs)).toDouble / 1e6 - y.toDouble
         var b = 0
-        while (b < dFeat) { zq += rndQ(wl(b) * xs(b) * 1e9); b += 1 }
-        val pq = rndQ((1.0 / (1.0 + math.exp(-(zq.toDouble / 1e9)))) * 1e6)
-        val pmy = pq.toDouble / 1e6 - y.toDouble
-        b = 0
         while (b < dFeat) { acc(b) += rndQ(pmy * xs(b) * 1e6); b += 1 }
         acc
       }, (a, b2) => {
@@ -894,22 +889,6 @@ object TrainingDataClassifier {
     }
     out.result()
   }
-
-  /** The persisted per-step weight trajectory (step 1..20, bucket,
-    * wb) beside the final-weight registry — built once per fixture
-    * like [[ensureClfWeights]] (the same trainer run, all snapshots
-    * kept). */
-  private[graft] def ensureClfTrajectory(s: SparkSession, d: String): String =
-    Store.materialize("clftraj", "v1", d, "documents") { path =>
-      val (tf, n) = qualityClfTf(s, d)
-      val steps = trainQualityClfSteps(tf, n)
-      s.createDataFrame(steps.zipWithIndex.flatMap { case (w, i) =>
-          w.toSeq.zipWithIndex.map { case (v, b) =>
-            ((i + 1).toLong, b.toLong, v) }
-        }.toSeq)
-        .toDF("step", "bucket", "wb")
-        .coalesce(1).write.mode("overwrite").parquet(path)
-    }
 
   /** X108: quality-classifier training — the model-based filter step
     * real curation pipelines run where this engine so far only had
@@ -939,7 +918,7 @@ object TrainingDataClassifier {
 
   /** X118: classifier calibration audit (reliability table) — the
     * acceptance check a trained filter model ships with: docs scored
-    * under the REGISTRY weights ([[ensureClfWeights]] — staged once,
+    * under the REGISTRY weights ([[ensureClfModel]] — staged once,
     * never retrained per consumer), predicted probability binned into
     * deciles, and per bin the mean prediction vs the observed
     * positive rate plus their gap (the per-bin ECE term). A model
@@ -955,7 +934,7 @@ object TrainingDataClassifier {
     * is the scoring scan itself. Gap/means in pure-BIGINT
     * [[intRoundHalfAway]]. */
   val x118ClfCalibration: Q = (s, d) => {
-    val wdf = s.read.parquet(ensureClfWeights(s, d))
+    val wdf = clfTable(s, d, "w")
     val tf = clfTf1(s, d)
     val mp = intRoundHalfAway(col("spq"), col("n_docs"))
     val pr = intRoundHalfAway(col("sy") * 1000000L, col("n_docs"))
@@ -977,24 +956,24 @@ object TrainingDataClassifier {
     * the x108→x118 loop: x118 MEASURES
     * miscalibration, this FIXES it with the production-standard
     * 1-parameter correction and re-emits the reliability table under
-    * σ(z/T*). T* comes from the persisted [[ensureClfTemp]] fit
+    * σ(z/T*). T* comes from the persisted [[ensureClfModel]] fit
     * (val-split quantized-NLL grid argmin — staged beside the weight
     * registry, the x98 model-artifact contract; the ORACLE refits
     * weights AND temperature from scratch, re-proving both stores on
     * every run). Scoring replays [[clfLogits]]' exact aggregation,
-    * then one σ(z/T) per doc ([[sigmaT]], 1e-6-quantized) onto ≤10
+    * then one σ(z/T) per doc ([[clfProb]], 1e-6-quantized) onto ≤10
     * bins — the only corpus-sized cost is the scoring scan, identical
     * to x118's. EngineSpec pins NLL(T*) ≤ NLL(1) (grid-guaranteed)
     * and ECE_after ≤ ECE_before on the val split. */
   val x136TempScaling: Q = (s, d) => {
-    val wdf = s.read.parquet(ensureClfWeights(s, d))
-    val tdf = s.read.parquet(ensureClfTemp(s, d))
+    val wdf = clfTable(s, d, "w")
+    val tdf = clfTable(s, d, "temp")
     val tf = clfTf1(s, d)
     val mp = intRoundHalfAway(col("spq"), col("n_docs"))
     val pr = intRoundHalfAway(col("sy") * 1000000L, col("n_docs"))
     clfLogits(tf, wdf)
       .crossJoin(broadcast(tdf.select(col("tq"))))
-      .select(col("y"), col("tq"), sigmaT(col("zq"), col("tq")).as("pq"))
+      .select(col("y"), col("tq"), clfProb(tempLogit).as("pq"))
       .withColumn("bin",
         least(call_function("div", col("pq"), lit(100000L)), lit(9L)))
       .groupBy(col("bin"), col("tq"))
@@ -1024,7 +1003,7 @@ object TrainingDataClassifier {
     * AUC both fold that histogram. Precision is NULL (both engines)
     * when a cut predicts nothing positive. */
   val x138ClfRoc: Q = (s, d) => {
-    val wdf = s.read.parquet(ensureClfWeights(s, d))
+    val wdf = clfTable(s, d, "w")
     val (tf, _) = qualityClfTf(s, d)
     // checkpointed once: the histogram feeds the AUC fold AND the
     // threshold sweep (the x131 scored-table precedent)
@@ -1076,7 +1055,7 @@ object TrainingDataClassifier {
     * hug ½ is where the filter is guessing). One scoring pass + one
     * bounded histogram + one broadcast-cut aggregation. */
   val x139UncertaintySample: Q = (s, d) => {
-    val wdf = s.read.parquet(ensureClfWeights(s, d))
+    val wdf = clfTable(s, d, "w")
     val docs = Tables.documents(s, d)
     // checkpointed once: the margin table feeds the cut histogram AND
     // the per-source aggregation (the x131 precedent)
@@ -1084,13 +1063,8 @@ object TrainingDataClassifier {
       .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
       .withColumn("mg", abs(col("pq") - 500000L))
       .localCheckpoint()
-    val hist = scored.groupBy(col("mg")).agg(count(lit(1)).as("cnt"))
-    val tot = hist.agg(sum(col("cnt")).as("n"))
-    val cut = hist
-      .withColumn("cum", sum(col("cnt")).over(Window.orderBy(col("mg"))))
-      .crossJoin(broadcast(tot))
-      .filter(col("cum") * 20L >= col("n"))
-      .agg(min(col("mg")).as("cut05"))
+    val cut = nearestRankCut(scored, "mg", "cut05")((cum, n) =>
+      cum * 20L >= n)
     scored.crossJoin(broadcast(cut))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
@@ -1239,16 +1213,6 @@ object TrainingDataClassifier {
         CAST(ABS(((2 * spq + n_docs) // (2 * n_docs))
           - ((2 * sy * 1000000 + n_docs) // (2 * n_docs))) AS DOUBLE) / 1e6
           AS gap"""
-
-  /** The quantile cut over `sc`'s column `v`: its histogram `h`, total
-    * `tt`, cumulative counts `c` and `cut(<name>)`, the least value
-    * whose cumulative count satisfies `cond`. */
-  private def cutCtes(v: String, name: String, cond: String): String =
-    s"""h AS (SELECT $v, CAST(COUNT(*) AS BIGINT) AS cnt FROM sc GROUP BY $v),
-      tt AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n FROM h),
-      c AS (SELECT $v, CAST(SUM(cnt) OVER (ORDER BY $v) AS BIGINT) AS cum
-        FROM h),
-      cut AS (SELECT MIN($v) AS $name FROM c, tt WHERE $cond)"""
 
   /** [[clfTrainedSql]]'s training trajectory: `zf`, the final model's
     * logits, and `trajz(doc_id, y, step, zq)`, every doc's logit after
@@ -1616,12 +1580,7 @@ object TrainingDataClassifier {
       sc AS MATERIALIZED (SELECT d.source, p.y,
           abs(p.pq - p.y * 1000000) AS el2n_q
         FROM ps p JOIN documents d USING (doc_id)),
-      hist AS (SELECT el2n_q, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM sc GROUP BY el2n_q),
-      cum AS (SELECT el2n_q, SUM(cnt) OVER (ORDER BY el2n_q) AS cum
-        FROM hist),
-      nn2 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM sc),
-      cut AS (SELECT MIN(el2n_q) AS cut20 FROM cum, nn2 WHERE cum * 5 >= n),
+      ${cutCtes("el2n_q", "cut20", "cum * 5 >= n")},
       ag AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
           CAST(SUM(CASE WHEN el2n_q < cut20 THEN 1 ELSE 0 END) AS BIGINT)
             AS n_pruned,

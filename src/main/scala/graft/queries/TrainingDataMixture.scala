@@ -904,13 +904,8 @@ object TrainingDataMixture {
         docs.filter(balde < 90))
       .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
       .localCheckpoint()
-    val hist = scored.groupBy(col("red_q")).agg(count(lit(1)).as("cnt"))
-    val tot = hist.agg(sum(col("cnt")).as("n"))
-    val cut = hist
-      .withColumn("cum", sum(col("cnt")).over(Window.orderBy(col("red_q"))))
-      .crossJoin(broadcast(tot))
-      .filter(col("cum") * 10L >= col("n") * 9L)
-      .agg(min(col("red_q")).as("cut90"))
+    val cut = nearestRankCut(scored, "red_q", "cut90")((cum, n) =>
+      cum * 10L >= n * 9L)
     scored.crossJoin(broadcast(cut))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
@@ -1344,16 +1339,16 @@ object TrainingDataMixture {
         GROUP BY doc_id)"""
 
   val oracles: Map[String, String] = Map(
-    "x149_rholoss_select" -> """
+    "x149_rholoss_select" -> s"""
       WITH dd AS (SELECT doc_id, source, text,
           ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % 100
             AS b
         FROM documents),
       pool AS (SELECT doc_id, source, text FROM dd WHERE b >= 90),
-      tr AS (SELECT regexp_split_to_array(trim(text), '\s+') AS toks
+      tr AS (SELECT regexp_split_to_array(trim(text), '\\s+') AS toks
         FROM dd WHERE b < 90),
       ptok AS (
-        SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+'))
+        SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+'))
           AS token
         FROM pool),
       cnt AS (SELECT token, COUNT(*) AS c FROM ptok GROUP BY token),
@@ -1380,7 +1375,7 @@ object TrainingDataMixture {
             unnest(list_transform(range(1, greatest(len(toks) - 1, 0)
               + 1), i -> toks[i] || ' ' || toks[i+1])) AS g
           FROM (SELECT doc_id,
-              regexp_split_to_array(trim(text), '\s+') AS toks
+              regexp_split_to_array(trim(text), '\\s+') AS toks
             FROM pool))),
       ragg AS (SELECT p.doc_id, CAST(COUNT(*) AS BIGINT) AS nb,
           CAST(SUM(CAST(ROUND(-LN(
@@ -1396,13 +1391,7 @@ object TrainingDataMixture {
       sc AS MATERIALIZED (
         SELECT d.source, u.doc_id, u.u_q - r.r_q AS red_q
         FROM u JOIN r USING (doc_id) JOIN pool d USING (doc_id)),
-      hist AS (SELECT red_q, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM sc GROUP BY red_q),
-      cum AS (SELECT red_q, SUM(cnt) OVER (ORDER BY red_q) AS cum
-        FROM hist),
-      nn2 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM sc),
-      cut AS (SELECT MIN(red_q) AS cut90 FROM cum, nn2
-        WHERE cum * 10 >= n * 9),
+      ${cutCtes("red_q", "cut90", "cum * 10 >= n * 9")},
       ag AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
           CAST(SUM(CASE WHEN red_q > cut90 THEN 1 ELSE 0 END) AS BIGINT)
             AS n_sel,

@@ -1684,9 +1684,9 @@ object TrainingDataQuality {
         ((CASE WHEN num < 0 THEN -1 ELSE 1 END)
           * ((2 * abs(num * 100) + den) // (2 * den))) < -10 AS degrading
       FROM r ORDER BY source""",
-    "x78_gopher_rules" -> """
+    "x78_gopher_rules" -> s"""
       WITH t AS (SELECT doc_id,
-          regexp_split_to_array(trim(text), '\s+') AS toks FROM documents),
+          regexp_split_to_array(trim(text), '\\s+') AS toks FROM documents),
       c AS (SELECT doc_id,
           CAST(len(toks) AS BIGINT) AS n_words,
           CAST(GREATEST(len(toks), 1) AS BIGINT) AS nw,
@@ -1697,7 +1697,7 @@ object TrainingDataQuality {
           CAST(len(list_filter(toks, t -> regexp_matches(t, '[#…]')))
             AS BIGINT) AS ns,
           CAST(len(list_intersect(list_distinct(toks),
-            ['the', 'a', 'of', 'and'])) AS BIGINT) AS nst
+            [$stopwordsSql])) AS BIGINT) AS nst
         FROM t)
       SELECT doc_id, n_words,
         CAST((2 * nch * 10000 + nw) // (2 * nw) AS DOUBLE) / 1e4

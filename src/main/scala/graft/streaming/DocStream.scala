@@ -109,8 +109,9 @@ object DocStream {
       Seq("doc_id"), "left_anti")
 
   /** Model-gate admission for one micro-batch against the persisted
-    * classifier weight REGISTRY ([[graft.queries.TrainingDataClassifier
-    * .ensureClfWeights]]): the batch pays its own feature build (the
+    * classifier weight REGISTRY (the `w` table of
+    * [[graft.queries.TrainingDataClassifier.ensureClfModel]], whose
+    * path is `weightsPath`): the batch pays its own feature build (the
     * trainer's exact
     * [[graft.queries.TrainingDataClassifier.clfFeatures]] rows
     * — streaming cannot drift from the features the weights were

@@ -1913,7 +1913,7 @@ class EngineSpec extends AnyFunSuite {
     // snaps broadcast + interpreted zip_with/aggregate folds) replayed
     // over the same feature table; the production consumers now
     // compute the identical integers in one task-side compiled fold
-    val traj = spark.read.parquet(TrainingDataClassifier.ensureClfTrajectory(spark, sf))
+    val traj = TrainingDataClassifier.clfTable(spark, sf, "traj")
     val (tf, _) = TrainingDataClassifier.qualityClfTf(spark, sf)
     val ref = tf.crossJoin(broadcast(TrainingDataClassifier.trajRow(traj)))
       .withColumn("ptqs",
@@ -2053,8 +2053,7 @@ class EngineSpec extends AnyFunSuite {
       assert(math.abs(gap - math.abs(mp - pr)) < 2e-6)
     }
     // the registry copy is the fresh training, bit-for-bit at 6dp
-    val stored = spark.read
-      .parquet(TrainingDataClassifier.ensureClfWeights(spark, sf))
+    val stored = TrainingDataClassifier.clfTable(spark, sf, "w")
       .collect().map(r => r.getLong(0) ->
         BigDecimal(r.getDouble(1)).setScale(6, BigDecimal.RoundingMode.HALF_UP))
       .toMap
@@ -2458,12 +2457,12 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x136 temperature scaling: grid argmin ≡ store, NLL(T*) ≤ NLL(1), ECE does not regress") {
-    val grid = TrainingDataClassifier.clfTempGrid(spark, sf).collect()
+    val wdf = TrainingDataClassifier.clfTable(spark, sf, "w")
+    val grid = TrainingDataClassifier.clfTempGrid(spark, sf, wdf).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(grid.map(_._1).toSet == (25L until 401L by 5).toSet)
     val (tqStar, snllStar) = grid.minBy { case (tq, snll) => (snll, tq) }
-    val st = spark.read.parquet(TrainingDataClassifier.ensureClfTemp(spark, sf))
-      .collect()
+    val st = TrainingDataClassifier.clfTable(spark, sf, "temp").collect()
     assert(st.length == 1, "temperature store must hold exactly one row")
     assert(st(0).getLong(0) == tqStar && st(0).getLong(1) == snllStar,
       s"store (${st(0).getLong(0)}, ${st(0).getLong(1)}) != grid argmin ($tqStar, $snllStar)")
@@ -2472,7 +2471,6 @@ class EngineSpec extends AnyFunSuite {
     val snll1 = grid.find(_._1 == 100L).get._2
     assert(snllStar <= snll1, s"fitted NLL $snllStar > uncalibrated $snll1")
     // ECE before/after on the fit split, from the exact quantized scores
-    val wdf = spark.read.parquet(TrainingDataClassifier.ensureClfWeights(spark, sf))
     val valDocs = Tables.documents(spark, sf).filter(
       pmod(conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
         .cast("long"), lit(100L)).between(90, 94))
@@ -2503,7 +2501,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x138 ROC: AUC ≡ driver midrank recount, curves monotone, endpoints exact") {
-    val wdf = spark.read.parquet(TrainingDataClassifier.ensureClfWeights(spark, sf))
+    val wdf = TrainingDataClassifier.clfTable(spark, sf, "w")
     val (tf, _) = TrainingDataClassifier.qualityClfTf(spark, sf)
     val scored = TrainingDataClassifier.clfScores(tf, wdf).collect()
       .map(r => (r.getLong(1), r.getLong(2)))
@@ -2537,7 +2535,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x139 uncertainty sampling: budget respected, cut ≡ driver nearest-rank replay") {
-    val wdf = spark.read.parquet(TrainingDataClassifier.ensureClfWeights(spark, sf))
+    val wdf = TrainingDataClassifier.clfTable(spark, sf, "w")
     val (tf, _) = TrainingDataClassifier.qualityClfTf(spark, sf)
     val margins = TrainingDataClassifier.clfScores(tf, wdf).collect()
       .map(r => math.abs(r.getLong(2) - 500000L)).sorted
@@ -2586,7 +2584,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x142 label noise: thresholds ≡ driver replay, flags are the confident off-diagonal") {
-    val wdf = spark.read.parquet(TrainingDataClassifier.ensureClfWeights(spark, sf))
+    val wdf = TrainingDataClassifier.clfTable(spark, sf, "w")
     val (tf, _) = TrainingDataClassifier.qualityClfTf(spark, sf)
     val scored = TrainingDataClassifier.clfScores(tf, wdf).collect()
       .map(r => (r.getLong(1), r.getLong(2)))
@@ -2662,7 +2660,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x163 kappa: chance correction bites on skewed sources; replica agrees") {
-    val wdf = spark.read.parquet(TrainingDataClassifier.ensureClfWeights(spark, sf))
+    val wdf = TrainingDataClassifier.clfTable(spark, sf, "w")
     val (tf, _) = TrainingDataClassifier.qualityClfTf(spark, sf)
     val scored = TrainingDataClassifier.clfScores(tf, wdf)
       .join(Tables.documents(spark, sf).select(col("doc_id"), col("source")),
@@ -2799,7 +2797,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("x159 TracIn: full driver replica reproduces the top-20 self-influence queue") {
     import graft.ml.LogFit
-    val trajW = spark.read.parquet(TrainingDataClassifier.ensureClfTrajectory(spark, sf))
+    val trajW = TrainingDataClassifier.clfTable(spark, sf, "traj")
       .collect().groupBy(_.getLong(0)).view.mapValues { rs =>
         val w = Array.fill(68)(0.0)
         rs.foreach(r => w(r.getLong(1).toInt) = r.getDouble(2))
@@ -2855,14 +2853,14 @@ class EngineSpec extends AnyFunSuite {
   test("x157 cartography: trajectory snapshots replay; regions partition the corpus") {
     // the persisted trajectory is exactly the trainer's snapshots —
     // step 20 must equal the serving registry bit-for-bit
-    val traj = spark.read.parquet(TrainingDataClassifier.ensureClfTrajectory(spark, sf))
+    val traj = TrainingDataClassifier.clfTable(spark, sf, "traj")
     val steps = traj.select("step").distinct().collect()
       .map(_.getLong(0)).sorted
     assert(steps.toSeq == (1L to 20L))
     val w20 = traj.filter(col("step") === 20L)
       .select("bucket", "wb").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val reg = spark.read.parquet(TrainingDataClassifier.ensureClfWeights(spark, sf))
+    val reg = TrainingDataClassifier.clfTable(spark, sf, "w")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(w20 == reg, "final snapshot must equal the serving registry")
     val rows = SparkEntry.queries("x157_cartography")(spark, sf).collect()
@@ -3068,7 +3066,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("x150 EL2N: cut replayed driver-side; pruned mass is the easy-confident fifth") {
-    val wdf = spark.read.parquet(TrainingDataClassifier.ensureClfWeights(spark, sf))
+    val wdf = TrainingDataClassifier.clfTable(spark, sf, "w")
     val (tf, _) = TrainingDataClassifier.qualityClfTf(spark, sf)
     val el2n = TrainingDataClassifier.clfScores(tf, wdf).collect()
       .map(r => math.abs(r.getLong(2) - r.getLong(1) * 1000000L)).sorted
@@ -3332,7 +3330,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("x173 GNS: identical examples carry zero gradient variance; fixture GNS positive") {
     import spark.implicits._
-    val wdf = spark.read.parquet(TrainingDataClassifier.ensureClfWeights(spark, sf))
+    val wdf = TrainingDataClassifier.clfTable(spark, sf, "w")
     // 200 copies of one doc: every per-example gradient is identical,
     // so tr(Sigma) = 0 exactly (n*S2 = S1^2 per dim) and B = 0
     val docs = (0 until 200).map(i =>
@@ -3775,7 +3773,7 @@ class EngineSpec extends AnyFunSuite {
       s"strict > cut must keep at most 10%: $totalSel of $totalDocs")
     assert(totalSel > 0, "the anneal slice must be non-empty")
     // driver recompute off the shared scoring path
-    val wdf = spark.read.parquet(TrainingDataClassifier.ensureClfWeights(spark, sf))
+    val wdf = TrainingDataClassifier.clfTable(spark, sf, "w")
     val docs = Tables.documents(spark, sf)
     val scored = TrainingDataClassifier.clfScores(TrainingDataClassifier.clfFeatures(docs), wdf)
       .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
@@ -3870,8 +3868,8 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("a wrong-width weight relation fails in-plan instead of scoring NULLs") {
-    val wdf = spark.read.parquet(TrainingDataClassifier.ensureClfWeights(spark, sf))
-    val traj = spark.read.parquet(TrainingDataClassifier.ensureClfTrajectory(spark, sf))
+    val wdf = TrainingDataClassifier.clfTable(spark, sf, "w")
+    val traj = TrainingDataClassifier.clfTable(spark, sf, "traj")
     val (tf, _) = TrainingDataClassifier.qualityClfTf(spark, sf)
     def raised(run: => Any): Boolean = {
       val e = intercept[Exception](run)
@@ -3891,7 +3889,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("a feature row wider or narrower than the weights fails the task-side folds") {
     import spark.implicits._
-    val traj = spark.read.parquet(TrainingDataClassifier.ensureClfTrajectory(spark, sf))
+    val traj = TrainingDataClassifier.clfTable(spark, sf, "traj")
     def tfOf(width: Int) = Seq((1L, 1L, Seq.fill(width)(0.01)),
       (2L, 0L, Seq.fill(68)(0.02))).toDF("doc_id", "y", "xs")
     def failure(run: => Any): String = {
@@ -3916,6 +3914,41 @@ class EngineSpec extends AnyFunSuite {
     x108(spark, sf) // count a warm build: a suite's first table read may add jobs
     val (_, jobs) = JobCount(spark)(x108(spark, sf))
     assert(jobs == 23, s"x108 build jobs: $jobs")
+  }
+
+  test("the classifier store trains once: one feature build, one 20-step run") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    // a fresh fixture directory names a fresh store, so the build runs
+    val fixture = Files.createTempDirectory("clf_fixture")
+    Files.copy(Paths.get(sf, "documents.parquet"), fixture.resolve("documents.parquet"))
+    val d = fixture.toString
+    def deleteTree(p: Path): Unit = if (Files.exists(p)) {
+      val st = Files.walk(p)
+      try st.iterator().asScala.toSeq.reverse.foreach(Files.delete)
+      finally st.close()
+    }
+    var store: Option[String] = None
+    try {
+      Tables.documents(spark, d).count() // a table's first read may add jobs
+      val (path, jobs) = JobCount(spark)(TrainingDataClassifier.ensureClfModel(spark, d))
+      store = Some(path)
+      // 23 jobs are x108's build (feature checkpoint, row count, 20 GD
+      // steps) and 7 write the three tables and fit the temperature; a
+      // second training run would add 23 more
+      assert(jobs == 30, s"classifier store build jobs: $jobs")
+      val traj = spark.read.parquet(s"$path/traj")
+      assert(traj.count() == 20L * 68L)
+      val w20 = traj.filter(col("step") === 20L).select("bucket", "wb")
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val w = spark.read.parquet(s"$path/w")
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(w.size == 68 && w20 == w, "w must be the trajectory's last step")
+      assert(spark.read.parquet(s"$path/temp").count() == 1L)
+    } finally {
+      store.foreach(p => deleteTree(Paths.get(p)))
+      deleteTree(fixture)
+    }
   }
 
   test("x111 fails in-plan on an embedding that is not 64 wide") {

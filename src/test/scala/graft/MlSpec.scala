@@ -1,33 +1,15 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ml.GroupForest
 
-/** Per-group RandomForest (M2 parity path). Forests aren't
-  * cross-engine reproducible, so this is invariant-checked rather
-  * than oracle-hashed: fixed seed → deterministic within the engine,
+/** The ML paths: the distributed per-group forest (M2), the m1
+  * seasonal fit and the IVF index. Forests aren't cross-engine
+  * reproducible, so they are invariant-checked rather than
+  * oracle-hashed: fixed seed → deterministic within the engine,
   * finite errors, chronological split honored. */
 class MlSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val sf = TestSpark.sf
-
-  test("per-group forest trains one model per group with finite holdout MAE") {
-    val rep = GroupForest.trainPerGroup(spark, sf, maxGroups = 3).collect()
-    assert(rep.length == 3)
-    rep.foreach { r =>
-      val (nTrain, nTest, mae) =
-        (r.getAs[Long]("n_treino"), r.getAs[Long]("n_teste"), r.getAs[Double]("mae"))
-      assert(nTrain > 0)
-      assert(nTest > 0, "chronological split must leave a holdout")
-      assert(!mae.isNaN && mae >= 0.0 && !mae.isInfinite)
-    }
-  }
-
-  test("fixed seed makes the per-group forest deterministic") {
-    val a = GroupForest.trainPerGroup(spark, sf, maxGroups = 2).collect().toSeq
-    val b = GroupForest.trainPerGroup(spark, sf, maxGroups = 2).collect().toSeq
-    assert(a == b)
-  }
 
   test("distributed per-group learner: all groups, finite MAE, deterministic") {
     import graft.ml.DistributedGroupLearner

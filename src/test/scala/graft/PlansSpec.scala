@@ -476,21 +476,23 @@ class PlansSpec extends AnyFunSuite {
 
   test("x118 calibration scores off the weight REGISTRY, not a retrain") {
     // the x98 staged-read contract for model artifacts: the plan must
-    // read the persisted clfw_ parquet — scoring a corpus may never
-    // re-enter the 20-job training loop
+    // read the classifier store's persisted `w` parquet — scoring a
+    // corpus may never re-enter the 20-job training loop
+    val store = graft.queries.TrainingDataClassifier.ensureClfModel(spark, sf)
     val q = SparkEntry.queries("x118_clf_calibration")(spark, sf)
     q.count()
     val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("clfw_"),
-      s"x118 must scan the persisted weight store:\n$plan")
+    assert(plan.contains(s"$store/w"),
+      s"x118 must scan the persisted weight table:\n$plan")
   }
 
   test("x136 reads the staged temperature + weight stores, no refit in-plan") {
+    val store = graft.queries.TrainingDataClassifier.ensureClfModel(spark, sf)
     val q = SparkEntry.queries("x136_temp_scaling")(spark, sf)
     q.count()
     val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("clfw_") && plan.contains("clft_"),
-      s"x136 must scan the persisted weight AND temperature stores:\n$plan")
+    assert(plan.contains(s"$store/w") && plan.contains(s"$store/temp"),
+      s"x136 must scan the persisted weight AND temperature tables:\n$plan")
   }
 
   test("x134/x126 read the ingest-staged winnow store, not a fresh fingerprint scan") {

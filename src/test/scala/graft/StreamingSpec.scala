@@ -410,7 +410,7 @@ class StreamingSpec extends AnyFunSuite {
   test("model-gate admission: stream ≡ batch ≡ x122's kept counts") {
     val docs = graft.core.Tables.documents(spark, sf)
       .select("doc_id", "source", "text")
-    val weights = graft.queries.TrainingDataClassifier.ensureClfWeights(spark, sf)
+    val weights = s"${graft.queries.TrainingDataClassifier.ensureClfModel(spark, sf)}/w"
     val tmp = java.nio.file.Files.createTempDirectory("docs_gate").toString
     docs.write.mode("overwrite").parquet(tmp)
     val outDir = java.nio.file.Files.createTempDirectory("gate_out").toString
@@ -477,7 +477,7 @@ class StreamingSpec extends AnyFunSuite {
       .select("doc_id", "text").localCheckpoint()
     val store = java.nio.file.Files.createTempDirectory("e2e_sig").toString
     graft.dedup.NearDup.saveSignatureStore(corpus, store)
-    val weights = graft.queries.TrainingDataClassifier.ensureClfWeights(spark, sf)
+    val weights = s"${graft.queries.TrainingDataClassifier.ensureClfModel(spark, sf)}/w"
     // arriving: exact re-deliveries (die at the fingerprint gate),
     // near-copies (die at the signature gate), and genuinely new docs
     val redelivered = corpusRaw.filter(col("doc_id") < 100)
