@@ -354,10 +354,6 @@ object TrainingData {
       (if (v < 0) -r else r).toLong
     }
 
-  /** The keyword that marks an oracle CTE MATERIALIZED when `mat`
-    * (the inline-expansion guard for long chains), else nothing. */
-  private[queries] def matSql(mat: Boolean): String = if (mat) " MATERIALIZED" else ""
-
   /** The oracles' connected components over an undirected edge CTE
     * `p(id_a, id_b)`: `edges2`, both orientations, and the recursive
     * transitive closure `reach(a, b)` (the query needs WITH RECURSIVE;
@@ -395,17 +391,17 @@ object TrainingData {
         FROM (SELECT k, list_transform(range(1, len(m) + 1), i ->
             list_sum(list_transform(list_zip(m[i], v), p -> p[1] * p[2]))) AS w
           FROM it$c, $src WHERE k < 50)),
-      uvec$c AS MATERIALIZED (SELECT list_transform(v, x ->
+      uvec$c AS (SELECT list_transform(v, x ->
           x / sqrt(list_sum(list_transform(v, y -> y * y)))) AS u
         FROM it$c WHERE k = 50),
-      lamt$c AS MATERIALIZED (SELECT
+      lamt$c AS (SELECT
           list_sum(list_transform(list_zip(u, w), p -> p[1] * p[2])) AS lam
         FROM (SELECT u, list_transform(range(1, len(m) + 1), i ->
             list_sum(list_transform(list_zip(m[i], u), p -> p[1] * p[2]))) AS w
           FROM uvec$c, $src))"""
 
   /** `out(m)`: `src` with eigenpair `c` deflated away. */
-  private[queries] def deflateCte(out: String, src: String, c: String): String = s"""$out AS MATERIALIZED (
+  private[queries] def deflateCte(out: String, src: String, c: String): String = s"""$out AS (
         SELECT list_transform(range(1, len(m) + 1), i ->
             list_transform(range(1, len(m) + 1), j ->
               m[i][j] - lam * u[i] * u[j])) AS m
@@ -421,7 +417,7 @@ object TrainingData {
       (0 until n).map(c =>
         s"SELECT $c AS c, (SELECT lam FROM lamt$c) AS lam FROM uvec$c")
         .mkString(""",
-      lams AS MATERIALIZED (""", " UNION ALL ", ")")
+      lams AS (""", " UNION ALL ", ")")
 
   /** The rows of `docs` with a non-empty lower-cased token, plus
     * `cnt`, their 64 md5-bucket counts: x108's and x111's shared bucket

@@ -1620,26 +1620,22 @@ object TrainingDataAnn {
   /** Shared DuckDB generators for the PQ oracles (x99/x100): exact
     * squared L2 as an ordered list fold; nearest-centroid assignment
     * on ROUND(L2²·1e6) BIGINT with cid tie-break; exact integer-mean
-    * recentering (the Spark side's lloydStep conventions). `mat` marks
-    * a CTE MATERIALIZED, for the long OPQ chains (the inline-expansion
-    * guard). */
+    * recentering (the Spark side's lloydStep conventions). */
   private def pqL2Sql(a: String, b: String): String =
     s"""list_sum(list_transform(list_zip($a, $b),
        p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
          * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))))"""
 
-  private def pqAssignSql(sub: String, cents: String, out: String,
-      mat: Boolean = false): String = s"""
-        $out AS${matSql(mat)} (SELECT vec_id, m, cell, sub FROM (
+  private def pqAssignSql(sub: String, cents: String, out: String): String = s"""
+        $out AS (SELECT vec_id, m, cell, sub FROM (
           SELECT s.vec_id, s.m, c.cid AS cell, s.sub,
             ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
               ORDER BY CAST(ROUND(${pqL2Sql("s.sub", "c.ce")} * 1e6, 0) AS BIGINT),
                 c.cid) AS rk
           FROM $sub s JOIN $cents c ON c.m = s.m) WHERE rk = 1)"""
 
-  private def pqCentSql(assigned: String, out: String,
-      mat: Boolean = false): String = s"""
-        $out AS${matSql(mat)} (SELECT m, cell AS cid,
+  private def pqCentSql(assigned: String, out: String): String = s"""
+        $out AS (SELECT m, cell AS cid,
           list(CAST(CAST(sv AS DOUBLE) / (CAST(n AS DOUBLE) * 16777216)
             AS FLOAT) ORDER BY pos) AS ce
         FROM (
@@ -1694,51 +1690,49 @@ object TrainingDataAnn {
   /** Two PQ Lloyd iterations over `sub` from the seeds `c0<sfx>`: the
     * CTEs a0, c1, a1 and c2 (each suffixed `sfx`), then the final
     * assignment against c2 as `out`. */
-  private def pqLloydCtes(sub: String, sfx: String, out: String,
-      mat: Boolean = false): String = Seq(
-    pqAssignSql(sub, s"c0$sfx", s"a0$sfx", mat),
-    pqCentSql(s"a0$sfx", s"c1$sfx", mat),
-    pqAssignSql(sub, s"c1$sfx", s"a1$sfx", mat),
-    pqCentSql(s"a1$sfx", s"c2$sfx", mat),
-    pqAssignSql(sub, s"c2$sfx", out, mat)).mkString(",")
+  private def pqLloydCtes(sub: String, sfx: String, out: String): String = Seq(
+    pqAssignSql(sub, s"c0$sfx", s"a0$sfx"),
+    pqCentSql(s"a0$sfx", s"c1$sfx"),
+    pqAssignSql(sub, s"c1$sfx", s"a1$sfx"),
+    pqCentSql(s"a1$sfx", s"c2$sfx"),
+    pqAssignSql(sub, s"c2$sfx", out)).mkString(",")
 
   /** `sub(vec_id, m, sub)`: the 8 width-8 sub-vectors of `vec` over `from`. */
-  private def pqSubCte(sub: String, vec: String, from: String,
-      mat: Boolean = false): String = s"""$sub AS${matSql(mat)} (SELECT vec_id, m,
+  private def pqSubCte(sub: String, vec: String, from: String): String =
+    s"""$sub AS (SELECT vec_id, m,
           list_slice($vec, m * 8 + 1, m * 8 + 8) AS sub
         FROM $from, UNNEST(range(0, 8)) AS t(m))"""
 
   /** A PQ codebook over `sub` ([[pqSubCte]]): the seeds `c0`, two Lloyd
     * iterations (`c1`, `c2`) and the codes `codes`; no trailing comma. */
-  private def pqCodebookCtes(sub: String, vec: String, from: String,
-      mat: Boolean = false): String = s"""${pqSubCte(sub, vec, from, mat)},
+  private def pqCodebookCtes(sub: String, vec: String, from: String): String =
+    s"""${pqSubCte(sub, vec, from)},
       c0 AS (SELECT m, CAST(vec_id AS INT) AS cid, sub AS ce
         FROM $sub WHERE vec_id < 16),
-      ${pqLloydCtes(sub, "", "codes", mat)}"""
+      ${pqLloydCtes(sub, "", "codes")}"""
 
   /** The IVF-PQ coarse quantizer over the vectors of `from`: the
     * one-subspace rows `f`, seeds `c0f`, centroids `c1f`/`c2f` and the
     * assignment `af`. */
-  private def pqCoarseCtes(from: String, af: String, mat: Boolean): String =
+  private def pqCoarseCtes(from: String, af: String): String =
     s"""f AS (SELECT vec_id, 0 AS m, embedding AS sub FROM $from),
       c0f AS (SELECT m, CAST(vec_id AS INT) AS cid, sub AS ce
         FROM f WHERE vec_id < 16),
-      ${pqLloydCtes("f", "f", af, mat)}"""
+      ${pqLloydCtes("f", "f", af)}"""
 
   /** DuckDB mirror of the IVF-PQ store build ([[writeIvfPq]]) over the
     * vectors of `from`: the coarse quantizer ([[pqCoarseCtes]], its
     * assignment named `af`), the residuals `res`/`rsub` and their PQ
     * codebook (`c0` … `c2`, codes `codes`); no trailing comma. */
-  private def ivfPqStoreCtes(from: String, af: String = "af",
-      mat: Boolean = false): String =
-    s"""${pqCoarseCtes(from, af, mat)},
-            ${residualCte("res", af, mat)},
-      ${pqCodebookCtes("rsub", "r", "res", mat)}"""
+  private def ivfPqStoreCtes(from: String, af: String = "af"): String =
+    s"""${pqCoarseCtes(from, af)},
+            ${residualCte("res", af)},
+      ${pqCodebookCtes("rsub", "r", "res")}"""
 
   /** `name(vec_id, cell, r)`: each vector of the coarse assignment `af`
     * minus its cell's `c2f` centroid. */
-  private def residualCte(name: String, af: String, mat: Boolean = false): String =
-    s"""$name AS${matSql(mat)} (SELECT a.vec_id, a.cell,
+  private def residualCte(name: String, af: String): String =
+    s"""$name AS (SELECT a.vec_id, a.cell,
           ${residualSql("a.sub", "c.ce")}
             AS r
         FROM $af a JOIN c2f c ON c.m = a.m AND c.cid = a.cell)"""
@@ -1794,7 +1788,7 @@ object TrainingDataAnn {
     * a PQ codebook on its sub-vectors, ADC distances from the queries
     * vec_id < 5, the exact squared L2 and recall@10 of one ranking
     * against the other. */
-  private def pqRecallSql(src: String, mat: Boolean): String = s"""${pqCodebookCtes("sub", "embedding", src, mat)},
+  private def pqRecallSql(src: String): String = s"""${pqCodebookCtes("sub", "embedding", src)},
       qs AS (SELECT vec_id AS qid, m, sub AS qsub FROM sub WHERE vec_id < 5),
       nce AS (SELECT k.vec_id AS nid, k.m, c.ce
         FROM codes k JOIN c2 c ON c.m = k.m AND c.cid = k.cell),
@@ -1825,17 +1819,17 @@ object TrainingDataAnn {
     * [[graft.ml.Opq]] driver replica — prototype-verified over all
     * 4160 values) → the eigenvalue-allocation recursion → the
     * rotation. Shared by the x99b audit and x114's composed serving
-    * oracle; MATERIALIZED throughout keeps the chain linear. */
+    * oracle. */
   private def opqRotationCtes: String = {
     val uUnion = (0 until 64).map(c => s"SELECT $c AS c, u FROM uvec$c")
       .mkString(" UNION ALL ")
     s"""WITH RECURSIVE $quantizedPairCtes,
-      ${covCellsCtes(mat = true)},
+      $covCellsCtes,
       covq AS ($covSelectSql),
       ${covMatrixCtes("mat0")}
       ${eigenCtes(64)},
-      ulist AS MATERIALIZED ($uUnion),
-      es AS MATERIALIZED (SELECT
+      ulist AS ($uUnion),
+      es AS (SELECT
         list(STRUCT_PACK(e := c, lam := lam) ORDER BY lam DESC, c) AS es
         FROM lams),
       alloc(k, asg, prods, cnts) AS (
@@ -1856,14 +1850,14 @@ object TrainingDataAnn {
               list_transform(range(1, 9), i ->
                 CASE WHEN cnts[i] < 8 THEN prods[i] END) AS elig
             FROM alloc, es WHERE k < 64))),
-      af AS MATERIALIZED (SELECT asg FROM alloc WHERE k = 64),
-      rotmap AS MATERIALIZED (
+      af AS (SELECT asg FROM alloc WHERE k = 64),
+      rotmap AS (
         SELECT ROW_NUMBER() OVER (ORDER BY b, r) AS o, e FROM (
           SELECT r, asg[r] AS b, es[r].e AS e
           FROM af, es, unnest(range(1, 65)) AS t(r))),
-      rot AS MATERIALIZED (SELECT o, u
+      rot AS (SELECT o, u
         FROM rotmap JOIN ulist ON ulist.c = rotmap.e),
-      re AS MATERIALIZED (
+      re AS (
         SELECT e.vec_id,
           list(list_sum(list_transform(list_zip(e.embedding, rot.u),
             p -> CAST(p[1] AS DOUBLE) * p[2])) ORDER BY rot.o) AS embedding
@@ -1900,7 +1894,7 @@ object TrainingDataAnn {
     * n·p − sᵢ·sⱼ run in HUGEINT, as [[graft.ml.Opq.covariance]]'s
     * 128-bit fold does: with 1e-6-quantized components they overflow
     * BIGINT past a few thousand vectors. */
-  private def covCellsCtes(mat: Boolean): String = s"""cells AS${matSql(mat)} (SELECT i, j,
+  private def covCellsCtes: String = s"""cells AS (SELECT i, j,
           CAST(SUM(CAST(qi AS HUGEINT) * qj) AS HUGEINT) AS p,
           CAST(SUM(CASE WHEN j = i THEN qi END) AS BIGINT) AS s_diag
         FROM p2 GROUP BY i, j),
@@ -1926,7 +1920,7 @@ object TrainingDataAnn {
   private def covMatrixCtes(out: String): String = s"""full_m AS (SELECT i, j, cov FROM covq
         UNION ALL SELECT j AS i, i AS j, cov FROM covq WHERE i < j),
       rows_m AS (SELECT i, list(cov ORDER BY j) AS r FROM full_m GROUP BY i),
-      $out AS MATERIALIZED (SELECT list(r ORDER BY i) AS m FROM rows_m)"""
+      $out AS (SELECT list(r ORDER BY i) AS m FROM rows_m)"""
 
   /** The semantic-dedup pair CTE `p(id_a, id_b)` ([[semdedupLabels]]):
     * vectors of `src` sharing a cell with rounded cosine ≥ 0.4, then
@@ -1948,31 +1942,28 @@ object TrainingDataAnn {
 
   val oracles: Map[String, String] = Map(
     "x146_kcenter_coreset" -> {
-      // every step CTE is MATERIALIZED: un-materialized, c$k inlines
-      // c${k-1} three times over and each copy bottoms out in the
-      // full Lloyd chain — the exponential inline-expansion trap
       val sb = new StringBuilder
       sb ++= s"""WITH $ivfAssignedCtes,
-        dm AS MATERIALIZED (
+        dm AS (
           SELECT a.cid AS ca, b.cid AS cb,
             CASE WHEN a.cid = b.cid THEN 0.0
                  ELSE ROUND(1 - ${cosSql("a.ce", "b.ce")}, 6) END AS d
           FROM cent2 a, cent2 b),
-        ids AS MATERIALIZED (SELECT DISTINCT ca AS cid FROM dm),
-        p1 AS MATERIALIZED (SELECT MIN(cid) AS cid FROM ids),
-        c1 AS MATERIALIZED (SELECT cid FROM p1)"""
+        ids AS (SELECT DISTINCT ca AS cid FROM dm),
+        p1 AS (SELECT MIN(cid) AS cid FROM ids),
+        c1 AS (SELECT cid FROM p1)"""
       for (k <- 2 to 6) sb ++= s""",
-        m$k AS MATERIALIZED (SELECT c.cid, MIN(d.d) AS md
+        m$k AS (SELECT c.cid, MIN(d.d) AS md
           FROM ids c JOIN dm d ON d.ca = c.cid
           JOIN c${k - 1} p ON d.cb = p.cid
           WHERE c.cid NOT IN (SELECT cid FROM c${k - 1})
           GROUP BY c.cid),
-        p$k AS MATERIALIZED (
+        p$k AS (
           SELECT cid FROM m$k ORDER BY md DESC, cid LIMIT 1),
-        c$k AS MATERIALIZED (
+        c$k AS (
           SELECT cid FROM c${k - 1} UNION ALL SELECT cid FROM p$k)"""
       for (k <- 1 to 6) sb ++= s""",
-        r$k AS MATERIALIZED (SELECT MAX(md) AS r FROM (
+        r$k AS (SELECT MAX(md) AS r FROM (
           SELECT c.cid, MIN(d.d) AS md FROM ids c
           JOIN dm d ON d.ca = c.cid JOIN c$k p ON d.cb = p.cid
           GROUP BY c.cid))"""
@@ -1987,7 +1978,7 @@ object TrainingDataAnn {
         FROM assigned WHERE vec_id % 2 = 0),
       bb AS (SELECT cell, vec_id AS match_id, embedding AS eb
         FROM assigned WHERE vec_id % 2 = 1),
-      cand AS MATERIALIZED (
+      cand AS (
         SELECT qid, match_id, cu FROM (
           SELECT qid, match_id,
             CAST(ROUND(${cosSql("ea", "eb")} * 1e4, 0) AS BIGINT) AS cu
@@ -2084,9 +2075,9 @@ object TrainingDataAnn {
       CROSS JOIN tb CROSS JOIN ta
       ORDER BY m, code""",
     "x99b_opq_recall" -> s"""$opqRotationCtes,
-      ${pqRecallSql("re", mat = true)}""",
+      ${pqRecallSql("re")}""",
     "x114_opq_serve" -> s"""$opqRotationCtes,
-      ${ivfPqStoreCtes("re", "aff", mat = true)},
+      ${ivfPqStoreCtes("re", "aff")},
       ${ivfPqAdcCtes("re", "aff")},
       ${distTopSql("r", "adc", 10)}""",
     "x176_embed_drift" -> s"""
@@ -2307,7 +2298,7 @@ object TrainingDataAnn {
         JOIN embeddings n ON n.vec_id = s.nid),
       ${distTopSql("rr", "ex", 4)}""",
     "x99_pq_recall" -> s"""
-      WITH ${pqRecallSql("embeddings", mat = false)}""",
+      WITH ${pqRecallSql("embeddings")}""",
     "x51_embed_standardize" -> """
       WITH d1 AS (SELECT vec_id,
           unnest(range(0, len(embedding))) AS i,
@@ -2327,14 +2318,14 @@ object TrainingDataAnn {
       ORDER BY q1.vec_id, q1.i""",
     "x65_embed_whiten" -> s"""
       WITH RECURSIVE $quantizedPairCtes,
-      ${covCellsCtes(mat = true)},
+      $covCellsCtes,
       covq AS ($covSelectSql),
       ${covMatrixCtes("mat")},
-      svt AS MATERIALIZED (SELECT list(s_ ORDER BY d_) AS sv FROM sums),
+      svt AS (SELECT list(s_ ORDER BY d_) AS sv FROM sums),
       ${powerIterCtes("1", "mat")},
       ${deflateCte("mat2", "mat", "1")},
       ${powerIterCtes("2", "mat2")},
-      md AS MATERIALIZED (SELECT
+      md AS (SELECT
           list_sum(list_transform(list_zip(svt.sv, uvec1.u),
             p -> CAST(p[1] AS DOUBLE) * p[2])) / (CAST(nn.n AS DOUBLE) * 1e6) AS md1,
           list_sum(list_transform(list_zip(svt.sv, uvec2.u),
@@ -2353,7 +2344,7 @@ object TrainingDataAnn {
       ORDER BY e.vec_id""",
     "x49_pca_project" -> s"""
       WITH RECURSIVE $quantizedPairCtes,
-      ${covCellsCtes(mat = false)},
+      $covCellsCtes,
       covq AS ($covSelectSql),
       ${covMatrixCtes("mat")},
       ${powerIterCtes("1", "mat")}
@@ -2408,7 +2399,7 @@ object TrainingDataAnn {
     },
     "x46_embed_covariance" -> s"""
       WITH $quantizedPairCtes,
-      ${covCellsCtes(mat = false)}
+      $covCellsCtes
       $covSelectSql
       ORDER BY cells.i, cells.j""",
     "x45_cluster_diversity" -> """

@@ -41,7 +41,7 @@ object TrainingDataClassifier {
           steps.last.toSeq.zipWithIndex.map { case (v, b) => (b.toLong, v) })
         .toDF("bucket", "wb")
       wdf.coalesce(1).write.mode("overwrite").parquet(s"$path/w")
-      clfTempGrid(s, d, wdf)
+      clfTempGrid(tf, wdf)
         .orderBy(col("snll"), col("tq")).limit(1)
         .coalesce(1).write.mode("overwrite").parquet(s"$path/temp")
     }
@@ -65,8 +65,10 @@ object TrainingDataClassifier {
   private def tempLogit: Column =
     (col("zq").cast("double") / 1e9) / (col("tq").cast("double") / lit(100.0))
 
-  /** The full (tq, snll) temperature grid of the weights `wdf` on x36's
-    * val split: T ∈ {0.25 … 4.00} step 0.05, each candidate scored by
+  /** The full (tq, snll) temperature grid of the weights `wdf` on the
+    * x36 val split of the feature table `tf` ([[qualityClfTf]]'s rows;
+    * [[clfFeatures]] is row-local, so filtering its rows is filtering
+    * the docs): T ∈ {0.25 … 4.00} step 0.05, each candidate scored by
     * the 1e-6-quantized negative log-likelihood of the 1e-6-quantized
     * σ(z/T) (both transcendentals quantized after evaluation, so the
     * scan is an integer argmin both engines replay bit-for-bit; ties
@@ -76,14 +78,12 @@ object TrainingDataClassifier {
     * NLL never exceeds the uncalibrated one). Scale: one val-split
     * scoring scan × a 76-row broadcast grid collapsing onto 76 rows —
     * the x111 bounded-grid shape. */
-  private[graft] def clfTempGrid(s: SparkSession, d: String,
-      wdf: DataFrame): DataFrame = {
-    val valDocs = Tables.documents(s, d)
-      .filter(splitBalde(col("doc_id")) >= 90 &&
-        splitBalde(col("doc_id")) < 95)
-    val grid = s.range(25, 401, 5).select(col("id").as("tq"))
+  private[graft] def clfTempGrid(tf: DataFrame, wdf: DataFrame): DataFrame = {
+    val valTf = tf.filter(splitBalde(col("doc_id")) >= 90 &&
+      splitBalde(col("doc_id")) < 95)
+    val grid = tf.sparkSession.range(25, 401, 5).select(col("id").as("tq"))
     val pc = least(greatest(clfProb(tempLogit), lit(1L)), lit(999999L))
-    clfLogits(clfFeatures(valDocs), wdf)
+    clfLogits(valTf, wdf)
       .crossJoin(broadcast(grid))
       .withColumn("nq", round(-log(
         when(col("y") === 1L, pc).otherwise(lit(1000000L) - pc)
@@ -1106,16 +1106,16 @@ object TrainingDataClassifier {
     * CTE with a leading comma. */
   private def clfGdStepsCtes: String =
     (1 to 20).map(k => s""",
-      ${clfLogitCte(s"z$k", w = s"w${k - 1}", mat = true)},
-      g$k AS MATERIALIZED (SELECT t.bucket,
+      ${clfLogitCte(s"z$k", w = s"w${k - 1}")},
+      g$k AS (SELECT t.bucket,
           CAST(SUM(CAST(ROUND((CAST(${clfProbSql("CAST(z.zq AS DOUBLE) / 1e9")}
             AS DOUBLE) / 1e6 - z.y) * t.x * 1e6, 0) AS BIGINT)) AS BIGINT)
             AS gq
         FROM tf t JOIN z$k z USING (doc_id) GROUP BY t.bucket),
-      gl$k AS MATERIALIZED (SELECT
+      gl$k AS (SELECT
           list(COALESCE(g.gq, CAST(0 AS BIGINT)) ORDER BY t.b) AS gl
         FROM range(0, 68) t(b) LEFT JOIN g$k g ON g.bucket = t.b),
-      w$k AS MATERIALIZED (SELECT list_transform(range(1, 69),
+      w$k AS (SELECT list_transform(range(1, 69),
           i -> w[i] - 16.0 * ((CAST(gl[i] AS DOUBLE) / 1e6)
             / CAST(nn.n AS DOUBLE))) AS w
         FROM w${k - 1}, gl$k, nn)""").mkString
@@ -1172,9 +1172,8 @@ object TrainingDataClassifier {
 
   /** `name(doc_id, y, zq)`: each doc's logit in 1e-9 units under the
     * weights `w` over the features `from` ([[clfLogits]]). */
-  private def clfLogitCte(name: String, from: String = "tf", w: String = "w20",
-      mat: Boolean = false): String =
-    s"""$name AS${matSql(mat)} (SELECT doc_id, y,
+  private def clfLogitCte(name: String, from: String = "tf", w: String = "w20"): String =
+    s"""$name AS (SELECT doc_id, y,
           CAST(SUM(CAST(ROUND(w[bucket + 1] * x * 1e9, 0) AS BIGINT))
             AS BIGINT) AS zq
         FROM $from, $w GROUP BY doc_id, y)"""
@@ -1221,7 +1220,7 @@ object TrainingDataClassifier {
     val stepUnion = (2 to 20)
       .map(k => s"SELECT doc_id, y, CAST(${k - 1} AS BIGINT) AS step, zq FROM z$k")
       .mkString(" UNION ALL ")
-    s"""${clfLogitCte("zf", mat = true)},
+    s"""${clfLogitCte("zf")},
       trajz AS ($stepUnion
         UNION ALL SELECT doc_id, y, CAST(20 AS BIGINT), zq FROM zf)"""
   }
@@ -1338,7 +1337,7 @@ object TrainingDataClassifier {
       FROM sc, cut GROUP BY source, cut05 ORDER BY source""",
     "x138_clf_roc" -> s"""$clfTrainedSql,
       ${clfScoredCtes()},
-      hist AS MATERIALIZED (SELECT pq, CAST(SUM(y) AS BIGINT) AS pos,
+      hist AS (SELECT pq, CAST(SUM(y) AS BIGINT) AS pos,
           CAST(SUM(1 - y) AS BIGINT) AS neg
         FROM ps GROUP BY pq),
       cn AS (SELECT pq, pos, neg,
@@ -1532,7 +1531,7 @@ object TrainingDataClassifier {
           CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT)
             AS t
         FROM documents),
-      cell AS MATERIALIZED (SELECT stage, region,
+      cell AS (SELECT stage, region,
           CAST(COUNT(*) AS BIGINT) AS n_docs,
           CAST(SUM(t) AS BIGINT) AS n_tok
         FROM st JOIN ntk USING (doc_id) GROUP BY stage, region),
@@ -1541,7 +1540,7 @@ object TrainingDataClassifier {
           CAST(SUM(CASE WHEN stage >= 1 THEN n_tok ELSE 0 END) AS BIGINT)
             AS kt
         FROM cell),
-      bs AS MATERIALIZED (SELECT stage, region, n_docs, n_tok, b,
+      bs AS (SELECT stage, region, n_docs, n_tok, b,
           CASE WHEN stage >= 1 THEN (b * n_tok) // kt ELSE 0 END AS basq,
           CASE WHEN stage >= 1 THEN (b * n_tok) % kt ELSE -1 END AS rem
         FROM cell, tot),
@@ -1577,7 +1576,7 @@ object TrainingDataClassifier {
       FROM dyn GROUP BY region, y ORDER BY region, y""",
     "x150_el2n_prune" -> s"""$clfTrainedSql,
       ${clfScoredCtes()},
-      sc AS MATERIALIZED (SELECT d.source, p.y,
+      sc AS (SELECT d.source, p.y,
           abs(p.pq - p.y * 1000000) AS el2n_q
         FROM ps p JOIN documents d USING (doc_id)),
       ${cutCtes("el2n_q", "cut20", "cum * 5 >= n")},

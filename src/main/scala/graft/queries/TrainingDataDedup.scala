@@ -1040,7 +1040,7 @@ object TrainingDataDedup {
     * Checksums cross the wire, never text. */
   val x134SourceRunOverlap: Q = (s, d) => {
     val docs = Tables.documents(s, d)
-    // no checkpoint: every consumer re-reads the MATERIALIZED store
+    // no checkpoint: every consumer re-reads the persisted store
     // parquet (cheap, and it keeps the staged-read contract visible
     // in the executed plan for PlansSpec)
     val fs = s.read.parquet(ensureWinnowStore(s, d))
@@ -1681,7 +1681,7 @@ object TrainingDataDedup {
           list_transform(ends, (x, j) ->
             CASE WHEN j = 1 THEN 1 ELSE ends[j - 1] + 1 END) AS starts
         FROM e),
-      chunks AS MATERIALIZED (SELECT doc_id, k - 1 AS ci,
+      chunks AS (SELECT doc_id, k - 1 AS ci,
           md5(array_to_string(list_slice(toks, starts[k],
             ends[k]), ' ')) AS fp,
           CAST(ends[k] - starts[k] + 1 AS BIGINT) AS tok_len
@@ -1700,13 +1700,13 @@ object TrainingDataDedup {
       GROUP BY c.doc_id ORDER BY c.doc_id"""
     },
     // x178: x14's pair/label CTEs + 10 unrolled integer PageRank
-    // iterations (every step CTE MATERIALIZED — the x146 lesson).
+    // iterations.
     "x178_pagerank_canonical" -> {
       val iters = (1 to 10).map { k => s""",
-      s$k AS MATERIALIZED (SELECT e.b AS doc_id,
+      s$k AS (SELECT e.b AS doc_id,
           CAST(SUM(r.r // r.dg) AS BIGINT) AS sq
         FROM edges2 e JOIN r${k - 1} r ON r.doc_id = e.a GROUP BY e.b),
-      r$k AS MATERIALIZED (SELECT n.doc_id, n.dg,
+      r$k AS (SELECT n.doc_id, n.dg,
           t.a + (2 * 85 * COALESCE(s.sq, 0) + 100) // 200 AS r
         FROM nodes n LEFT JOIN s$k s USING (doc_id) CROSS JOIN tele t)"""
       }.mkString
@@ -1718,7 +1718,7 @@ object TrainingDataDedup {
       nct AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
       tele AS (SELECT (2 * 15 * CAST(1000000000 AS BIGINT) + 100 * n) // (2 * 100 * n)
           AS a FROM nct),
-      r0 AS MATERIALIZED (SELECT doc_id, dg,
+      r0 AS (SELECT doc_id, dg,
           (2 * CAST(1000000000 AS BIGINT) + n) // (2 * n) AS r
         FROM nodes, nct)$iters,
       fam AS (SELECT l.canonico AS cluster, l.doc_id, r.r
@@ -1754,14 +1754,14 @@ object TrainingDataDedup {
           OVER (PARTITION BY doc_id ORDER BY j ROWS UNBOUNDED PRECEDING)
           AS reach
         FROM mk),
-      cf AS MATERIALIZED (SELECT *,
+      cf AS (SELECT *,
           (reach IS NOT NULL AND reach >= j) AS covered,
           CASE WHEN (reach IS NOT NULL AND reach >= j)
             AND NOT COALESCE(LAG(reach IS NOT NULL AND reach >= j)
               OVER (PARTITION BY doc_id ORDER BY j), FALSE)
             THEN 1 ELSE 0 END AS st
         FROM cv),
-      ci AS MATERIALIZED (SELECT *, SUM(st)
+      ci AS (SELECT *, SUM(st)
           OVER (PARTITION BY doc_id ORDER BY j ROWS UNBOUNDED PRECEDING)
           AS isl
         FROM cf),

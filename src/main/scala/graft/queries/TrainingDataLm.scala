@@ -1561,7 +1561,7 @@ object TrainingDataLm {
     "x9_token_count" -> x9TokenCount)
 
   /** Shared DuckDB generators for the BPE oracles (x106/x107): the
-    * full 50-iteration training unrolled as chained MATERIALIZED CTEs
+    * full 50-iteration training unrolled as chained CTEs
     * (word-frequency vocab → per-iteration pair counts → argmax merge
     * → greedy apply), with greedy left-to-right application written in
     * the same closed-form run-parity list expression as the Spark
@@ -1594,7 +1594,7 @@ object TrainingDataLm {
     * WordPiece on the SAME slice inside one query (CTE names must be
     * unique per query — the round-9 collision lesson). */
   private def bpeWfCte(where: String, topV: Int): String =
-    s"""wf AS MATERIALIZED (
+    s"""wf AS (
         SELECT w, CAST(COUNT(*) AS BIGINT) AS f
         FROM (SELECT unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS w
               FROM documents WHERE $where)
@@ -1604,19 +1604,19 @@ object TrainingDataLm {
     * per-iteration pair counts pc_k and argmax merge m_k). */
   private def bpeIterCtes: String = {
     val sb = new StringBuilder
-    sb ++= s"""v0 AS MATERIALIZED (SELECT w, f,
+    sb ++= s"""v0 AS (SELECT w, f,
         $charSymsSql FROM wf)"""
     for (k <- 1 to bpeK) {
       sb ++= s""",
-      pc$k AS MATERIALIZED (
+      pc$k AS (
         SELECT syms[i] AS a, syms[i+1] AS b, CAST(SUM(f) AS BIGINT) AS cnt
         FROM v${k - 1}, unnest(range(1, len(syms))) AS t(i) GROUP BY 1, 2),
-      m$k AS MATERIALIZED (SELECT
+      m$k AS (SELECT
         COALESCE((SELECT a FROM pc$k ORDER BY cnt DESC, a, b LIMIT 1), chr(1)) AS a,
         COALESCE((SELECT b FROM pc$k ORDER BY cnt DESC, a, b LIMIT 1), chr(1)) AS b,
         COALESCE((SELECT cnt FROM pc$k ORDER BY cnt DESC, a, b LIMIT 1),
           CAST(0 AS BIGINT)) AS cnt),
-      v$k AS MATERIALIZED (${bpeApplySql(s"v${k - 1}, m$k m")})"""
+      v$k AS (${bpeApplySql(s"v${k - 1}, m$k m")})"""
     }
     sb.toString
   }
@@ -1635,22 +1635,22 @@ object TrainingDataLm {
     * counts yu_k, HUGEINT likelihood argmax ym_k). */
   private def wpIterCtes: String = {
     val sb = new StringBuilder
-    sb ++= s"""y0 AS MATERIALIZED (SELECT w, f,
+    sb ++= s"""y0 AS (SELECT w, f,
         $charSymsSql FROM wf)"""
     for (k <- 1 to bpeK) {
       sb ++= s""",
-      yu$k AS MATERIALIZED (
+      yu$k AS (
         SELECT syms[i] AS s, CAST(SUM(f) AS BIGINT) AS c
         FROM y${k - 1}, unnest(range(1, len(syms)+1)) AS t(i) GROUP BY 1),
-      yp$k AS MATERIALIZED (
+      yp$k AS (
         SELECT syms[i] AS a, syms[i+1] AS b, CAST(SUM(f) AS BIGINT) AS cnt
         FROM y${k - 1}, unnest(range(1, len(syms))) AS t(i) GROUP BY 1, 2),
-      ys$k AS MATERIALIZED (
+      ys$k AS (
         SELECT p.a, p.b, p.cnt, ua.c AS ca, ub.c AS cb,
           CAST(CAST(p.cnt AS HUGEINT) * 1000000000000 //
             (CAST(ua.c AS HUGEINT) * ub.c) AS BIGINT) AS q
         FROM yp$k p JOIN yu$k ua ON ua.s = p.a JOIN yu$k ub ON ub.s = p.b),
-      ym$k AS MATERIALIZED (SELECT
+      ym$k AS (SELECT
         COALESCE((SELECT a FROM ys$k ORDER BY q DESC, cnt DESC, a, b
           LIMIT 1), chr(1)) AS a,
         COALESCE((SELECT b FROM ys$k ORDER BY q DESC, cnt DESC, a, b
@@ -1663,7 +1663,7 @@ object TrainingDataLm {
           LIMIT 1), CAST(1 AS BIGINT)) AS cb,
         COALESCE((SELECT q FROM ys$k ORDER BY q DESC, cnt DESC, a, b
           LIMIT 1), CAST(0 AS BIGINT)) AS q),
-      y$k AS MATERIALIZED (${bpeApplySql(s"y${k - 1}, ym$k m")})"""
+      y$k AS (${bpeApplySql(s"y${k - 1}, ym$k m")})"""
     }
     sb.toString
   }
@@ -1740,7 +1740,7 @@ object TrainingDataLm {
     * counts of `from`, then `g0` … `g<bpeK>`, its distinct words split to
     * characters and re-merged by each learned merge `m<k>` in turn. */
   private def bpeSegCtes(from: String): String =
-    s"""sw AS MATERIALIZED (
+    s"""sw AS (
           SELECT source, w, CAST(COUNT(*) AS BIGINT) AS f
           FROM (SELECT source,
                 unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS w
@@ -1751,16 +1751,16 @@ object TrainingDataLm {
   /** `<g>0`, the words of the query `words` split to characters, then
     * `<g>1` … `<g><bpeK>`, re-merged by each merge `<m><k>` in turn. */
   private def bpeApplyCtes(g: String, words: String, m: String): String =
-    s"""${g}0 AS MATERIALIZED (SELECT w, CAST(0 AS BIGINT) AS f,
+    s"""${g}0 AS (SELECT w, CAST(0 AS BIGINT) AS f,
           $charSymsSql
           FROM ($words))""" +
       (1 to bpeK).map(k => s""",
-        $g$k AS MATERIALIZED (${bpeApplySql(s"$g${k - 1}, $m$k m")})""").mkString
+        $g$k AS (${bpeApplySql(s"$g${k - 1}, $m$k m")})""").mkString
 
   /** `name(w, f)`: the counts of the lower-cased words of ≤ 16 chars
     * in `from`, the unigram tokenizer's vocabulary. */
   private def shortWordsCte(name: String, from: String): String =
-    s"""$name AS MATERIALIZED (
+    s"""$name AS (
         SELECT w, CAST(COUNT(*) AS BIGINT) AS f
         FROM (SELECT unnest(regexp_split_to_array(trim(lower(text)), '\\s+'))
             AS w
@@ -1769,7 +1769,7 @@ object TrainingDataLm {
 
   /** [[shortWordsCte]] over `documents`, per source: `name(source, w, f)`. */
   private def shortSourceWordsCte(name: String): String =
-    s"""$name AS MATERIALIZED (
+    s"""$name AS (
         SELECT source, w, CAST(COUNT(*) AS BIGINT) AS f
         FROM (SELECT source,
             unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS w
@@ -1793,7 +1793,7 @@ object TrainingDataLm {
     def mx(cs: Seq[String]) =
       if (cs.size == 1) cs.head else cs.mkString("GREATEST(", ", ", ")")
     s""",
-      $t$i AS MATERIALIZED (SELECT *, ${mx(cands.map(_._1))} AS s$i,
+      $t$i AS (SELECT *, ${mx(cands.map(_._1))} AS s$i,
         ${mx(cands.map(_._2))} AS e$i FROM $t${i - 1})"""
   }.mkString
 
@@ -1808,7 +1808,7 @@ object TrainingDataLm {
         GROUP BY w)"""
 
   /** `fof(r, n_r)`: the frequencies of [[wordCountCte]]'s counts. */
-  private def fofCte: String = """fof AS MATERIALIZED (
+  private def fofCte: String = """fof AS (
         SELECT c AS r, CAST(COUNT(*) AS BIGINT) AS n_r
         FROM cnt GROUP BY c)"""
 
@@ -1937,28 +1937,28 @@ object TrainingDataLm {
       ${bpeApplyCtes("hb", "SELECT w FROM hw", "m")},
       ${bpeApplyCtes("hy", "SELECT w FROM hw", "ym")},
       ${shortWordsCte("twf", s"documents WHERE $trainWhere")},
-      tcand AS MATERIALIZED (
+      tcand AS (
         SELECT w, f, (j * 4 + l) AS k, substring(w, CAST(j + 1 AS INT),
           CAST(l AS INT)) AS p
         FROM twf, unnest(range(0, length(w))) AS tj(j),
           unnest(range(1, 5)) AS tl(l)
         WHERE j + l <= length(w)),
-      tpc AS MATERIALIZED (SELECT p, CAST(SUM(f) AS BIGINT) AS cnt
+      tpc AS (SELECT p, CAST(SUM(f) AS BIGINT) AS cnt
         FROM tcand GROUP BY p),
       ttot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS t FROM tpc),
-      tscs AS MATERIALIZED (SELECT p,
+      tscs AS (SELECT p,
           CAST(ROUND(ln(CAST(cnt AS DOUBLE) / CAST(t AS DOUBLE)) * 1e4, 0)
             AS BIGINT) AS sq
         FROM tpc, ttot),
-      hcand AS MATERIALIZED (
+      hcand AS (
         SELECT w, (j * 4 + l) AS k, substring(w, CAST(j + 1 AS INT),
           CAST(l AS INT)) AS p
         FROM (SELECT w FROM hw), unnest(range(0, length(w))) AS tj(j),
           unnest(range(1, 5)) AS tl(l)
         WHERE j + l <= length(w)),
-      hkl AS MATERIALIZED (
+      hkl AS (
         SELECT c.w, c.k, s.sq FROM hcand c JOIN tscs s USING (p)),
-      hscl AS MATERIALIZED (
+      hscl AS (
         SELECT ww.w, list(hkl.sq ORDER BY r.k) AS scl
         FROM (SELECT w FROM hw) ww
         CROSS JOIN range(1, 65) r(k)
@@ -2056,9 +2056,9 @@ object TrainingDataLm {
         val c = s"c$chain"
         val sb = new StringBuilder
         sb ++= s""",
-      ${c}kl AS MATERIALIZED (SELECT cd.w, cd.k, s.sq
+      ${c}kl AS (SELECT cd.w, cd.k, s.sq
         FROM ucand cd JOIN $scoresCte s USING (p)),
-      ${c}scl AS MATERIALIZED (
+      ${c}scl AS (
         SELECT ww.w, list(COALESCE(kl.sq, $NegSq) ORDER BY r.k) AS scl
         FROM uwords ww CROSS JOIN range(1, 65) r(k)
         LEFT JOIN ${c}kl kl ON kl.w = ww.w AND kl.k = r.k
@@ -2070,7 +2070,7 @@ object TrainingDataLm {
           val mx = if (cands.size == 1) cands.head
             else cands.mkString("GREATEST(", ", ", ")")
           sb ++= s""",
-      ${c}d$t AS MATERIALIZED (SELECT *, CASE WHEN $t <= length(w)
+      ${c}d$t AS (SELECT *, CASE WHEN $t <= length(w)
         THEN $mx ELSE ${NegSq * 32L} END AS f$t FROM ${c}d${t - 1})"""
         }
         val faList = (0 to 16).map(t => s"f$t").mkString("[", ", ", "]")
@@ -2094,7 +2094,7 @@ object TrainingDataLm {
         }
         val pList = (1 to 16).map(u => s"p$u").mkString("[", ", ", "]")
         sb ++= s""",
-      ${c}dec AS MATERIALIZED (SELECT w,
+      ${c}dec AS (SELECT w,
         list_filter($pList, x -> x IS NOT NULL) AS pieces,
         CAST(len(list_filter($pList, x -> x IS NOT NULL)) AS BIGINT) AS np,
         CAST((fa[CAST(length(w) + 1 AS INT)]
@@ -2104,26 +2104,26 @@ object TrainingDataLm {
         sb.toString
       }
       def countsSql(chain: Int): String = s""",
-      c${chain}cnt AS MATERIALIZED (SELECT u.p,
+      c${chain}cnt AS (SELECT u.p,
           CAST(SUM(wf.f) AS BIGINT) AS cnt
         FROM c${chain}dec d JOIN wf USING (w), unnest(d.pieces) AS u(p)
         GROUP BY u.p),
-      c${chain}scs AS MATERIALIZED (SELECT p,
+      c${chain}scs AS (SELECT p,
           CAST(ROUND(ln(CAST(cnt AS DOUBLE) / CAST(tt.t AS DOUBLE)) * 1e4, 0)
             AS BIGINT) AS sq
         FROM c${chain}cnt, (SELECT CAST(SUM(cnt) AS BIGINT) AS t
           FROM c${chain}cnt) tt)"""
       s"""WITH ${shortWordsCte("wf", "documents")},
-      uwords AS MATERIALIZED (SELECT DISTINCT w FROM wf),
-      ucand AS MATERIALIZED (
+      uwords AS (SELECT DISTINCT w FROM wf),
+      ucand AS (
         SELECT w, (j * 4 + l) AS k, substring(w, CAST(j + 1 AS INT),
           CAST(l AS INT)) AS p
         FROM uwords, unnest(range(0, length(w))) AS tj(j),
           unnest(range(1, 5)) AS tl(l)
         WHERE j + l <= length(w)),
-      upc AS MATERIALIZED (SELECT p, CAST(SUM(f) AS BIGINT) AS cnt
+      upc AS (SELECT p, CAST(SUM(f) AS BIGINT) AS cnt
         FROM ucand JOIN wf USING (w) GROUP BY p),
-      scs0 AS MATERIALIZED (SELECT p,
+      scs0 AS (SELECT p,
           CAST(ROUND(ln(CAST(cnt AS DOUBLE) / CAST(tt.t AS DOUBLE)) * 1e4, 0)
             AS BIGINT) AS sq
         FROM upc, (SELECT CAST(SUM(cnt) AS BIGINT) AS t FROM upc) tt)
@@ -2135,9 +2135,9 @@ object TrainingDataLm {
       umul AS (SELECT p, cnt FROM (SELECT p, cnt,
           ROW_NUMBER() OVER (ORDER BY cnt DESC, p) AS rk
         FROM c2cnt WHERE length(p) > 1) WHERE rk <= 16),
-      upv AS MATERIALIZED (SELECT p, CAST(cnt AS BIGINT) AS cnt FROM usng
+      upv AS (SELECT p, CAST(cnt AS BIGINT) AS cnt FROM usng
         UNION ALL SELECT p, CAST(cnt AS BIGINT) AS cnt FROM umul),
-      upscs AS MATERIALIZED (SELECT p,
+      upscs AS (SELECT p,
           CAST(ROUND(ln(CAST(cnt AS DOUBLE) / CAST(tt.t AS DOUBLE)) * 1e4, 0)
             AS BIGINT) AS sq
         FROM upv, (SELECT CAST(SUM(cnt) AS BIGINT) AS t FROM upv) tt),
@@ -2158,22 +2158,22 @@ object TrainingDataLm {
       val (sList, eList) = (viterbiList("s"), viterbiList("e"))
       s"""WITH ${shortWordsCte("wf", "documents")},
       ${shortSourceWordsCte("sw")},
-      cand AS MATERIALIZED (
+      cand AS (
         SELECT w, f, (j * 4 + l) AS k, substring(w, CAST(j + 1 AS INT),
           CAST(l AS INT)) AS p
         FROM wf, unnest(range(0, length(w))) AS tj(j),
           unnest(range(1, 5)) AS tl(l)
         WHERE j + l <= length(w)),
-      pc AS MATERIALIZED (SELECT p, CAST(SUM(f) AS BIGINT) AS cnt
+      pc AS (SELECT p, CAST(SUM(f) AS BIGINT) AS cnt
         FROM cand GROUP BY p),
       tot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS t FROM pc),
-      scs AS MATERIALIZED (SELECT p,
+      scs AS (SELECT p,
           CAST(ROUND(ln(CAST(cnt AS DOUBLE) / CAST(t AS DOUBLE)) * 1e4, 0)
             AS BIGINT) AS sq
         FROM pc, tot),
-      kl AS MATERIALIZED (
+      kl AS (
         SELECT c.w, c.k, s.sq FROM cand c JOIN scs s USING (p)),
-      sclt AS MATERIALIZED (
+      sclt AS (
         SELECT ww.w, list(kl.sq ORDER BY r.k) AS scl
         FROM (SELECT DISTINCT w FROM wf) ww
         CROSS JOIN range(1, 65) r(k)
@@ -2432,7 +2432,7 @@ object TrainingDataLm {
           s"""CAST(SUM(CAST(ROUND(l$o * p$o / ($den) * 1e6, 0)
             AS BIGINT)) AS BIGINT) AS s$o""").mkString(",\n          ")
         em ++= s""",
-      e$k AS MATERIALIZED (SELECT
+      e$k AS (SELECT
           $sums
         FROM scored, lam${k - 1}),
       lam$k AS (SELECT
@@ -2446,35 +2446,35 @@ object TrainingDataLm {
           ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % 100
             AS b
         FROM documents),
-      ttr AS MATERIALIZED (
+      ttr AS (
         SELECT regexp_split_to_array(trim(text), '\\s+') AS toks
         FROM sp WHERE b < 90),
-      uni AS MATERIALIZED (SELECT w, CAST(COUNT(*) AS BIGINT) AS c1
+      uni AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c1
         FROM (SELECT unnest(toks) AS w FROM ttr) GROUP BY w),
       scal AS (SELECT CAST(SUM(c1) AS BIGINT) AS nn,
           CAST(COUNT(*) AS BIGINT) AS vv
         FROM uni),
-      bi AS MATERIALIZED (
+      bi AS (
         SELECT toks[CAST(i - 1 AS INT)] AS v, toks[CAST(i AS INT)] AS w,
           CAST(COUNT(*) AS BIGINT) AS c2
         FROM ttr, unnest(range(2, len(toks) + 1)) AS t(i)
         GROUP BY 1, 2),
-      ctx2 AS MATERIALIZED (SELECT v, CAST(SUM(c2) AS BIGINT) AS k2
+      ctx2 AS (SELECT v, CAST(SUM(c2) AS BIGINT) AS k2
         FROM bi GROUP BY v),
-      tri AS MATERIALIZED (
+      tri AS (
         SELECT toks[CAST(i - 2 AS INT)] AS u, toks[CAST(i - 1 AS INT)] AS v,
           toks[CAST(i AS INT)] AS w, CAST(COUNT(*) AS BIGINT) AS c3
         FROM ttr, unnest(range(3, len(toks) + 1)) AS t(i)
         GROUP BY 1, 2, 3),
-      ctx3 AS MATERIALIZED (SELECT u, v, CAST(SUM(c3) AS BIGINT) AS k3
+      ctx3 AS (SELECT u, v, CAST(SUM(c3) AS BIGINT) AS k3
         FROM tri GROUP BY u, v),
-      ho AS MATERIALIZED (
+      ho AS (
         SELECT toks[CAST(i - 2 AS INT)] AS u, toks[CAST(i - 1 AS INT)] AS v,
           toks[CAST(i AS INT)] AS w
         FROM (SELECT regexp_split_to_array(trim(text), '\\s+') AS toks
             FROM sp WHERE b >= 90 AND b < 95),
           unnest(range(3, len(toks) + 1)) AS t(i)),
-      scored AS MATERIALIZED (
+      scored AS (
         SELECT 1.0 / (CAST(vv AS DOUBLE) + 1.0) AS p0,
           CAST(COALESCE(c1, 0) AS DOUBLE) / CAST(nn AS DOUBLE) AS p1,
           CASE WHEN k2 IS NULL THEN 0.0

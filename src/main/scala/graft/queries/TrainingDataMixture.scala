@@ -565,8 +565,8 @@ object TrainingDataMixture {
     * published answer. Five unrolled steps, each ONE aggregation over
     * the (trigram, source) incidence table joined anti the covered
     * set (argmax by gain DESC, source ASC — engine-exact, no floats
-    * anywhere); the oracle replays all steps as MATERIALIZED CTEs
-    * (the x146 greedy discipline). Output per pick: rank, source,
+    * anywhere); the oracle replays all steps as chained CTEs.
+    * Output per pick: rank, source,
     * marginal gain, cumulative coverage and its share of the corpus
     * trigram space. Subset sources add zero after their superset —
     * greedy skips an individually-2nd-ranked subset source (pinned in
@@ -1388,7 +1388,7 @@ object TrainingDataMixture {
           (CASE WHEN s2 < 0 THEN -1 ELSE 1 END)
             * ((2 * abs(s2) + nb) // (2 * nb)) AS r_q
         FROM ragg),
-      sc AS MATERIALIZED (
+      sc AS (
         SELECT d.source, u.doc_id, u.u_q - r.r_q AS red_q
         FROM u JOIN r USING (doc_id) JOIN pool d USING (doc_id)),
       ${cutCtes("red_q", "cut90", "cum * 10 >= n * 9")},
@@ -1418,15 +1418,15 @@ object TrainingDataMixture {
           unnest(range(0, len(embedding))) AS pos,
           unnest(embedding) AS v
         FROM embeddings),
-      cen AS MATERIALIZED (SELECT label, pos,
+      cen AS (SELECT label, pos,
           SUM(FLOOR(CAST(v AS DOUBLE) * 16777216)) AS sv, COUNT(*) AS n
         FROM d1 GROUP BY label, pos),
       cmp AS (SELECT label, pos,
           CAST(sv AS DOUBLE) / (CAST(n AS DOUBLE) * 16777216) AS comp
         FROM cen),
-      rl AS MATERIALIZED (SELECT label, list(comp ORDER BY pos) AS r
+      rl AS (SELECT label, list(comp ORDER BY pos) AS r
         FROM cmp GROUP BY label),
-      nr AS MATERIALIZED (SELECT label, list_transform(r, x ->
+      nr AS (SELECT label, list_transform(r, x ->
           x / sqrt(list_sum(list_transform(r, y -> y * y)))) AS u
         FROM rl),
       mc AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM nr),
@@ -1435,7 +1435,7 @@ object TrainingDataMixture {
             / mc.m AS kvv
         FROM nr a, nr b, mc),
       kr AS (SELECT li, list(kvv ORDER BY lj) AS krow FROM kv GROUP BY li),
-      mat0 AS MATERIALIZED (SELECT list(krow ORDER BY li) AS m FROM kr)
+      mat0 AS (SELECT list(krow ORDER BY li) AS m FROM kr)
       ${eigenCtes(10)},
       ll AS (SELECT list(GREATEST(lam, CAST(0 AS DOUBLE)) ORDER BY c) AS ls
         FROM lams),
@@ -1498,24 +1498,22 @@ object TrainingDataMixture {
       FROM nt, grid GROUP BY source, seq_len
       ORDER BY source, seq_len""",
     // x166: the gram NLL CTEs mirror doremiExcessQ; the 10
-    // multiplicative-weight steps are unrolled with EVERY step CTE
-    // MATERIALIZED (the x146 lesson — un-materialized multi-referenced
-    // step CTEs inline exponentially) on HUGEINT (the step numerators
-    // reach ~10^21).
+    // multiplicative-weight steps are unrolled on HUGEINT (the step
+    // numerators reach ~10^21).
     "x166_doremi_weights" -> {
       val steps = (1 to 10).map { t =>
         s"""
-      m$t AS MATERIALIZED (SELECT w.source,
+      m$t AS (SELECT w.source,
           CAST(a.aq AS HUGEINT) * w.wq AS m
         FROM a${t - 1} a JOIN wts w USING (source)),
       sm$t AS (SELECT CAST(SUM(m) AS HUGEINT) AS sm FROM m$t),
-      n$t AS MATERIALIZED (SELECT source, 99 * s * m + sm AS nm,
+      n$t AS (SELECT source, 99 * s * m + sm AS nm,
           100 * s * sm AS den FROM m$t, sm$t, sc),
-      b$t AS MATERIALIZED (SELECT source,
+      b$t AS (SELECT source,
           (nm * 1000000) // den AS base, (nm * 1000000) % den AS rem
         FROM n$t),
       k$t AS (SELECT 1000000 - SUM(base) AS k FROM b$t),
-      a$t AS MATERIALIZED (SELECT source, base + CASE WHEN ROW_NUMBER()
+      a$t AS (SELECT source, base + CASE WHEN ROW_NUMBER()
           OVER (ORDER BY rem DESC, source) <= k THEN 1 ELSE 0 END AS aq
         FROM b$t, k$t)"""
       }.mkString(",")
@@ -1565,10 +1563,10 @@ object TrainingDataMixture {
         CROSS JOIN scal GROUP BY source),
       ellb AS (SELECT source, (2 * sb + nb) // (2 * nb) AS ell_bi_q
         FROM ebb),
-      exc AS MATERIALIZED (SELECT source, ell_uni_q, ell_bi_q,
+      exc AS (SELECT source, ell_uni_q, ell_bi_q,
           GREATEST(ell_uni_q - ell_bi_q, 0) AS excess_q
         FROM ellu JOIN ellb USING (source)),
-      wts AS MATERIALIZED (SELECT source,
+      wts AS (SELECT source,
           CAST(ROUND(EXP(0.1 * CAST(excess_q AS DOUBLE) / 1e4) * 1e6, 0)
             AS HUGEINT) AS wq
         FROM exc),
@@ -1576,12 +1574,12 @@ object TrainingDataMixture {
       u0 AS (SELECT source, CAST(1000000 AS HUGEINT) // s AS base,
           CAST(1000000 AS HUGEINT) % s AS rem FROM wts, sc),
       k0 AS (SELECT 1000000 - SUM(base) AS k FROM u0),
-      a0 AS MATERIALIZED (SELECT source, base + CASE WHEN ROW_NUMBER()
+      a0 AS (SELECT source, base + CASE WHEN ROW_NUMBER()
           OVER (ORDER BY rem DESC, source) <= k THEN 1 ELSE 0 END AS aq
         FROM u0, k0),$steps,
       acc AS (SELECT source, CAST(SUM(aq) AS HUGEINT) AS a
         FROM ($unions) GROUP BY source),
-      fb AS MATERIALIZED (SELECT source, a // 10 AS base, a % 10 AS rem
+      fb AS (SELECT source, a // 10 AS base, a % 10 AS rem
         FROM acc),
       fk AS (SELECT 1000000 - SUM(base) AS k FROM fb),
       fin AS (SELECT source, base + CASE WHEN ROW_NUMBER()
@@ -1634,8 +1632,7 @@ object TrainingDataMixture {
       SELECT CAST(rk AS BIGINT) AS rk, doc_id, n_tok,
         CAST(key_q AS DOUBLE) / 1e6 AS aes_key
       FROM top WHERE rk <= 50 ORDER BY rk""",
-    // x179: 5 unrolled greedy max-coverage steps, every pick and
-    // covered set MATERIALIZED (the x146 greedy discipline).
+    // x179: 5 unrolled greedy max-coverage steps.
     "x179_coverage_select" -> {
       val steps = new StringBuilder
       for (i <- 1 to 5) {
@@ -1646,11 +1643,11 @@ object TrainingDataMixture {
         val covPred = if (i == 1) "1 = 1"
           else s"g NOT IN (SELECT g FROM c${i - 1})"
         steps ++= s""",
-      p$i AS MATERIALIZED (SELECT source, CAST(COUNT(*) AS BIGINT)
+      p$i AS (SELECT source, CAST(COUNT(*) AS BIGINT)
           AS gain
         FROM inc WHERE $srcPred AND $covPred
         GROUP BY source ORDER BY gain DESC, source LIMIT 1),
-      c$i AS MATERIALIZED (${
+      c$i AS (${
           if (i == 1) "SELECT DISTINCT i.g FROM inc i JOIN p1 ON i.source = p1.source"
           else s"SELECT g FROM c${i - 1} UNION SELECT i.g FROM inc i JOIN p$i ON i.source = p$i.source"})"""
       }
@@ -1658,7 +1655,7 @@ object TrainingDataMixture {
         s"SELECT CAST($i AS BIGINT) AS rk, source, gain FROM p$i")
         .mkString(" UNION ALL ")
       s"""
-      WITH inc AS MATERIALIZED (SELECT DISTINCT source, g FROM (
+      WITH inc AS (SELECT DISTINCT source, g FROM (
           SELECT source,
             unnest(list_transform(range(1, greatest(len(toks) - 2, 0) + 1),
               i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS g
@@ -1730,16 +1727,16 @@ object TrainingDataMixture {
           ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
             % 100 AS b
         FROM documents),
-      csw AS MATERIALIZED (SELECT w, source,
+      csw AS (SELECT w, source,
           CAST(COUNT(*) AS BIGINT) AS cs
         FROM (SELECT source,
             unnest(regexp_split_to_array(trim(text), '\s+')) AS w
           FROM dd WHERE b < 90)
         GROUP BY w, source),
-      cw AS MATERIALIZED (SELECT w, CAST(SUM(cs) AS BIGINT) AS c,
+      cw AS (SELECT w, CAST(SUM(cs) AS BIGINT) AS c,
           CAST(COUNT(*) AS BIGINT) AS nsrc
         FROM csw GROUP BY w),
-      srcs AS MATERIALIZED (SELECT s.source, s.ns,
+      srcs AS (SELECT s.source, s.ns,
           COALESCE(u.us, 0) AS us
         FROM (SELECT source, CAST(SUM(cs) AS BIGINT) AS ns FROM csw
           GROUP BY source) s
@@ -1748,7 +1745,7 @@ object TrainingDataMixture {
         USING (source)),
       gl AS (SELECT CAST(SUM(c) AS BIGINT) AS n,
           CAST(COUNT(*) + 1 AS BIGINT) AS v FROM cw),
-      hot AS MATERIALIZED (SELECT w, cnt_ho, COALESCE(c, 0) AS c
+      hot AS (SELECT w, cnt_ho, COALESCE(c, 0) AS c
         FROM (SELECT w, CAST(COUNT(*) AS BIGINT) AS cnt_ho
           FROM (SELECT unnest(regexp_split_to_array(trim(text), '\s+'))
               AS w
@@ -1789,15 +1786,15 @@ object TrainingDataMixture {
           FROM documents)),
       firsts AS (SELECT source, g, MIN(doc_id) AS fd FROM tri
         GROUP BY source, g),
-      fresh AS MATERIALIZED (SELECT source,
+      fresh AS (SELECT source,
           fd // (SELECT width FROM mx) AS bucket,
           CAST(COUNT(*) AS BIGINT) AS m
         FROM firsts GROUP BY 1, 2),
-      pts AS MATERIALIZED (SELECT source,
+      pts AS (SELECT source,
           CAST(bucket * 1000000 AS BIGINT) AS lx,
           CAST(ROUND(LN(CAST(m AS DOUBLE)) * 1e6, 0) AS BIGINT) AS ly
         FROM fresh),
-      sums AS MATERIALIZED (SELECT source,
+      sums AS (SELECT source,
           CAST(COUNT(*) AS HUGEINT) AS n,
           CAST(SUM(lx) AS HUGEINT) AS sx, CAST(SUM(ly) AS HUGEINT) AS sy,
           CAST(SUM(CAST(lx AS HUGEINT) * ly) AS HUGEINT) AS sxy,

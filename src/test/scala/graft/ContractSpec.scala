@@ -64,4 +64,62 @@ class ContractSpec extends AnyFunSuite {
     assert(Verify.jsonObject(Seq("q" -> "java.lang.RuntimeException: a \"b\"\n\tc")) ==
       "{\"q\": \"java.lang.RuntimeException: a \\\"b\\\"\\n\\tc\"}")
   }
+
+  test("oracle CTEs: one scanner marks every WITH entry MATERIALIZED and nothing else") {
+    val M = " MATERIALIZED"
+    val cases = Seq(
+      // a plain WITH list
+      "WITH a AS (SELECT 1 AS x), b AS (SELECT x FROM a) SELECT * FROM b" ->
+        s"WITH a AS$M (SELECT 1 AS x), b AS$M (SELECT x FROM a) SELECT * FROM b",
+      // RECURSIVE, an entry with a column list
+      """WITH RECURSIVE e AS (SELECT 1 AS a, 2 AS b),
+        reach(a, b) AS (SELECT a, b FROM e
+          UNION SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a)
+        SELECT * FROM reach""" ->
+        s"""WITH RECURSIVE e AS$M (SELECT 1 AS a, 2 AS b),
+        reach(a, b) AS$M (SELECT a, b FROM e
+          UNION SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a)
+        SELECT * FROM reach""",
+      // a nested WITH, and a subquery in parentheses inside a body
+      "WITH a AS (WITH b AS (SELECT 1 AS x) SELECT x FROM b), c AS (SELECT (SELECT 1) AS y) SELECT 1" ->
+        s"WITH a AS$M (WITH b AS$M (SELECT 1 AS x) SELECT x FROM b), c AS$M (SELECT (SELECT 1) AS y) SELECT 1",
+      // an entry already marked is kept
+      s"WITH a AS$M (SELECT 1), c AS (SELECT 3) SELECT 1" ->
+        s"WITH a AS$M (SELECT 1), c AS$M (SELECT 3) SELECT 1",
+      // a WINDOW list, also inside an entry's body
+      "SELECT SUM(x) OVER w1, SUM(x) OVER w2 FROM t WINDOW w1 AS (ORDER BY x), w2 AS (ORDER BY y)" ->
+        "SELECT SUM(x) OVER w1, SUM(x) OVER w2 FROM t WINDOW w1 AS (ORDER BY x), w2 AS (ORDER BY y)",
+      "WITH a AS (SELECT SUM(x) OVER w FROM t WINDOW w AS (ORDER BY x), v AS (ORDER BY y)) SELECT 1" ->
+        s"WITH a AS$M (SELECT SUM(x) OVER w FROM t WINDOW w AS (ORDER BY x), v AS (ORDER BY y)) SELECT 1",
+      // quoted literals: unbalanced parentheses, doubled quotes, a WITH
+      "WITH a AS (SELECT '(' AS p, 'it''s ), b AS (' AS q) SELECT ' WITH x AS (' AS s" ->
+        s"WITH a AS$M (SELECT '(' AS p, 'it''s ), b AS (' AS q) SELECT ' WITH x AS (' AS s",
+      // comments: a WITH, an entry and a closing parenthesis
+      "SELECT 1 -- WITH x AS (\n" -> "SELECT 1 -- WITH x AS (\n",
+      "WITH a AS (SELECT 1 -- ), x AS (\n), b AS (SELECT '--- TOTAL ---') SELECT 1" ->
+        s"WITH a AS$M (SELECT 1 -- ), x AS (\n), b AS$M (SELECT '--- TOTAL ---') SELECT 1")
+    for ((in, want) <- cases) {
+      assert(SparkEntry.materializeCtes(in) == want, in)
+      assert(SparkEntry.materializeCtes(want) == want, s"not idempotent: $want")
+    }
+
+    // the decision lives in the scanner alone: no generator writes it ...
+    for ((_, oracles) <- SparkEntry.modules; (k, sql) <- oracles)
+      assert(!sql.contains("MATERIALIZED"), s"$k writes MATERIALIZED itself")
+    // ... and every entry of every registered oracle carries it: with
+    // literals and comments cut, an unmarked `AS (` is only a WINDOW
+    // definition (its WINDOW keyword comes after the last SELECT)
+    var marked = 0
+    for ((k, sql) <- SparkEntry.oracleSql) {
+      assert(SparkEntry.materializeCtes(sql) == sql, k)
+      val cut = sql.replaceAll("'[^']*'", "''").replaceAll("--[^\n]*", "")
+      marked += "AS MATERIALIZED \\(".r.findAllMatchIn(cut).size
+      for (m <- "\\bAS\\s*\\(".r.findAllMatchIn(cut)) {
+        val before = cut.substring(0, m.start)
+        assert(before.lastIndexOf("WINDOW") > before.lastIndexOf("SELECT"),
+          s"$k: unmarked entry at ${cut.substring(m.start - 40 max 0, m.end)}")
+      }
+    }
+    assert(marked > 1500, s"$marked entries marked")
+  }
 }

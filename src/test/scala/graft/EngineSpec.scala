@@ -2458,7 +2458,8 @@ class EngineSpec extends AnyFunSuite {
 
   test("x136 temperature scaling: grid argmin ≡ store, NLL(T*) ≤ NLL(1), ECE does not regress") {
     val wdf = TrainingDataClassifier.clfTable(spark, sf, "w")
-    val grid = TrainingDataClassifier.clfTempGrid(spark, sf, wdf).collect()
+    val grid = TrainingDataClassifier.clfTempGrid(
+        TrainingDataClassifier.qualityClfTf(spark, sf)._1, wdf).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(grid.map(_._1).toSet == (25L until 401L by 5).toSet)
     val (tqStar, snllStar) = grid.minBy { case (tq, snll) => (snll, tq) }

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,6 +25,26 @@ class PlansSpec extends AnyFunSuite {
   private def viaTopK(k: Int) =
     TopK.perGroup(Tables.orders(spark, sf), Seq("o_orderpriority"),
       Seq(("o_totalprice", true), ("o_orderkey", false)), k)
+
+  /** Every file scan of an executed query's plan, through adaptive
+    * plans, query stages and subqueries. */
+  private def fileScans(q: DataFrame): Seq[FileSourceScanExec] = {
+    def leaves(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => leaves(a.executedPlan)
+      case st: QueryStageExec => leaves(st.plan)
+      case s: FileSourceScanExec => Seq(s)
+      case other => other.children.flatMap(leaves) ++
+        other.subqueries.flatMap(leaves)
+    }
+    leaves(q.queryExecution.executedPlan)
+  }
+
+  /** Whether an executed query scans the directory `dir`, compared as
+    * absolute paths (the plan's string form abbreviates long paths). */
+  private def scans(q: DataFrame, dir: String): Boolean = {
+    val abs = java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
+    fileScans(q).exists(_.relation.location.rootPaths.exists(_.toUri.getPath == abs))
+  }
 
   test("TopKPerGroup equals the window-rank formulation (unique tiebreak)") {
     for (k <- Seq(1, 3, 10)) {
@@ -413,15 +436,7 @@ class PlansSpec extends AnyFunSuite {
     // no `embedding` in any store ReadSchema)
     val q = SparkEntry.queries("x109_ivf_addbatch")(spark, sf)
     q.count()
-    def leaves(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        leaves(a.executedPlan)
-      case s: org.apache.spark.sql.execution.FileSourceScanExec => Seq(s)
-      case other => other.children.flatMap(leaves) ++
-        other.subqueries.flatMap(leaves)
-    }
-    val cellScans = leaves(q.queryExecution.executedPlan).filter(
+    val cellScans = fileScans(q).filter(
       _.relation.location.rootPaths.exists(p =>
         p.toString.contains("ivf_base") && p.toString.contains("cells")))
     assert(cellScans.nonEmpty, "expected a store cell-map scan")
@@ -441,15 +456,7 @@ class PlansSpec extends AnyFunSuite {
       "base store build must exclude the batch slice")
     val q = SparkEntry.queries("x110_ivfpq_addbatch")(spark, sf)
     q.count()
-    def leaves(pl: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = pl match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        leaves(a.executedPlan)
-      case s: org.apache.spark.sql.execution.FileSourceScanExec => Seq(s)
-      case other => other.children.flatMap(leaves) ++
-        other.subqueries.flatMap(leaves)
-    }
-    val storeScans = leaves(q.queryExecution.executedPlan).filter(
+    val storeScans = fileScans(q).filter(
       _.relation.location.rootPaths.exists(_.toString.contains("ivfpq")))
     assert(storeScans.nonEmpty, "expected store scans")
     storeScans.foreach { f =>
@@ -481,18 +488,16 @@ class PlansSpec extends AnyFunSuite {
     val store = graft.queries.TrainingDataClassifier.ensureClfModel(spark, sf)
     val q = SparkEntry.queries("x118_clf_calibration")(spark, sf)
     q.count()
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains(s"$store/w"),
-      s"x118 must scan the persisted weight table:\n$plan")
+    assert(scans(q, s"$store/w"),
+      s"x118 must scan the persisted weight table:\n${q.queryExecution.executedPlan}")
   }
 
   test("x136 reads the staged temperature + weight stores, no refit in-plan") {
     val store = graft.queries.TrainingDataClassifier.ensureClfModel(spark, sf)
     val q = SparkEntry.queries("x136_temp_scaling")(spark, sf)
     q.count()
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains(s"$store/w") && plan.contains(s"$store/temp"),
-      s"x136 must scan the persisted weight AND temperature tables:\n$plan")
+    assert(scans(q, s"$store/w") && scans(q, s"$store/temp"),
+      s"x136 must scan the persisted weight AND temperature tables:\n${q.queryExecution.executedPlan}")
   }
 
   test("x134/x126 read the ingest-staged winnow store, not a fresh fingerprint scan") {

@@ -5,13 +5,14 @@ Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 
 Reads <verifyOutDir>/oracle_sql.json, runs each SQL in DuckDB with views
 named after the parquet tables in <sfDir>, and compares against the
-Spark parquet dump in <verifyOutDir>/<name>/. Columns sorted by name,
+Spark parquet dump in <verifyOutDir>/<name>/. Each oracle's DuckDB
+seconds (execute + fetch) go to <verifyOutDir>/oracle_times.json. Columns sorted by name,
 rows sorted by all columns, exact compare with a float-tolerance
 fallback report so near-misses are distinguishable from hard mismatches.
 
 NOT part of the engine — dev-only harness (driver-side python).
 """
-import json, math, sys, glob
+import json, math, sys, glob, time
 import duckdb
 import pandas as pd
 
@@ -52,6 +53,7 @@ def main():
             pass
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    times = {}
     for name, sql in sorted(oracle.items()):
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not files:
@@ -61,10 +63,14 @@ def main():
                 f"SELECT * FROM read_parquet({files!r})").fetchdf())
         except Exception as e:
             print(f"FAIL {name}: cannot read spark output: {e}"); n_fail += 1; continue
+        t0 = time.perf_counter()
         try:
-            exp = canon(con.execute(sql).fetchdf())
+            exp = con.execute(sql).fetchdf()
         except Exception as e:
             print(f"FAIL {name}: oracle error: {e}"); n_fail += 1; continue
+        finally:
+            times[name] = round(time.perf_counter() - t0, 3)
+        exp = canon(exp)
         if list(got.columns) != list(exp.columns):
             print(f"FAIL {name}: columns spark={list(got.columns)} oracle={list(exp.columns)}")
             n_fail += 1; continue
@@ -101,7 +107,10 @@ def main():
         else:
             print(f"PASS {name} ({len(got)} rows)")
             n_pass += 1
+    with open(f"{out_dir}/oracle_times.json", "w") as f:
+        json.dump(times, f, indent=1, sort_keys=True)
     print(f"== {n_pass} pass / {n_fail} fail ==")
+    print(f"== oracle total {sum(times.values()):.1f} s ==")
     sys.exit(1 if n_fail else 0)
 
 if __name__ == "__main__":
