@@ -380,8 +380,8 @@ object TrainingData {
     * eigensolve) for eigenpair `c` of the matrix CTE `src(m)`: `it<c>`
     * runs 50 max-abs-normalized iterations from the all-ones vector
     * (cast: a bare 1.0 is DECIMAL in DuckDB and would run the whole
-    * iteration in decimal arithmetic), `uvec<c>` is the unit eigenvector and `lamt<c>` its Rayleigh
-    * eigenvalue. The query needs WITH RECURSIVE; no leading or
+    * iteration in decimal arithmetic) and `uvec<c>` is the unit
+    * eigenvector. The query needs WITH RECURSIVE; no leading or
     * trailing comma. */
   private[queries] def powerIterCtes(c: String, src: String): String = s"""it$c(k, v) AS (
         SELECT 0, list_transform(m[1], x -> CAST(1.0 AS DOUBLE)) FROM $src
@@ -393,8 +393,11 @@ object TrainingData {
           FROM it$c, $src WHERE k < 50)),
       uvec$c AS (SELECT list_transform(v, x ->
           x / sqrt(list_sum(list_transform(v, y -> y * y)))) AS u
-        FROM it$c WHERE k = 50),
-      lamt$c AS (SELECT
+        FROM it$c WHERE k = 50)"""
+
+  /** `lamt<c>(lam)`: the Rayleigh eigenvalue of [[powerIterCtes]]'s
+    * `uvec<c>` in the matrix CTE `src(m)`. */
+  private[queries] def rayleighCte(c: String, src: String): String = s"""lamt$c AS (SELECT
           list_sum(list_transform(list_zip(u, w), p -> p[1] * p[2])) AS lam
         FROM (SELECT u, list_transform(range(1, len(m) + 1), i ->
             list_sum(list_transform(list_zip(m[i], u), p -> p[1] * p[2]))) AS w
@@ -408,12 +411,15 @@ object TrainingData {
         FROM $src, uvec$c, lamt$c)"""
 
   /** The top `n` eigenpairs of `mat0(m)` by power iteration and
-    * deflation (mat0 → mat1 → …), each block led by a comma, then
-    * `lams(c, lam)` unioning the eigenvalues. */
+    * deflation (mat0 → mat1 → … → mat<n-1>), each block led by a
+    * comma, then `lams(c, lam)` unioning the eigenvalues. */
   private[queries] def eigenCtes(n: Int): String =
-    (0 until n).map(c => s""",
+    (0 until n).map { c =>
+      s""",
       ${powerIterCtes(s"$c", s"mat$c")},
-      ${deflateCte(s"mat${c + 1}", s"mat$c", s"$c")}""").mkString +
+      ${rayleighCte(s"$c", s"mat$c")}""" + (if (c < n - 1) s""",
+      ${deflateCte(s"mat${c + 1}", s"mat$c", s"$c")}""" else "")
+    }.mkString +
       (0 until n).map(c =>
         s"SELECT $c AS c, (SELECT lam FROM lamt$c) AS lam FROM uvec$c")
         .mkString(""",

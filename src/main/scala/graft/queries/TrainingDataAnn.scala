@@ -1567,17 +1567,21 @@ object TrainingDataAnn {
 
   private def cosSql(a: String, b: String): String = s"(${cosExpr(a, b)})"
 
-  /** The IVF train+assign CTE chain (no leading WITH): cent0 seeds →
-    * two deterministic Lloyd iterations (6dp-rounded argmax assign,
-    * integer-sum element-wise mean quantized back to float) →
-    * `assigned` (vec_id, embedding, cell) — shared by [[ivfOracle]]
-    * (x13/x31) and the x35 semantic-dedup oracle. */
-  private lazy val ivfAssignedCtes: String = s"""cent0 AS (
+  /** The IVF training CTE chain (no leading WITH): cent0 seeds → two
+    * deterministic Lloyd iterations (6dp-rounded argmax assign,
+    * integer-sum element-wise mean quantized back to float) → `cent2`,
+    * the trained centroids (cid, ce). */
+  private lazy val ivfCentroidCtes: String = s"""cent0 AS (
         SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id < 16),
       ${ivfAssignSql("embeddings", "cent0", "assign0")},
       ${ivfCentSql("assign0", "cent1")},
       ${ivfAssignSql("embeddings", "cent1", "assign1")},
-      ${ivfCentSql("assign1", "cent2")},
+      ${ivfCentSql("assign1", "cent2")}"""
+
+  /** [[ivfCentroidCtes]] → `assigned` (vec_id, embedding, cell), every
+    * vector in its nearest `cent2` cell — shared by [[ivfOracle]]
+    * (x13/x31) and the x35 semantic-dedup oracle. */
+  private lazy val ivfAssignedCtes: String = s"""$ivfCentroidCtes,
       ${ivfAssignSql("embeddings", "cent2", "assigned")}"""
 
   /** Every `src` vector against every centroid of `cents`, ranked by
@@ -1943,7 +1947,7 @@ object TrainingDataAnn {
   val oracles: Map[String, String] = Map(
     "x146_kcenter_coreset" -> {
       val sb = new StringBuilder
-      sb ++= s"""WITH $ivfAssignedCtes,
+      sb ++= s"""WITH $ivfCentroidCtes,
         dm AS (
           SELECT a.cid AS ca, b.cid AS cb,
             CASE WHEN a.cid = b.cid THEN 0.0
@@ -2323,8 +2327,10 @@ object TrainingDataAnn {
       ${covMatrixCtes("mat")},
       svt AS (SELECT list(s_ ORDER BY d_) AS sv FROM sums),
       ${powerIterCtes("1", "mat")},
+      ${rayleighCte("1", "mat")},
       ${deflateCte("mat2", "mat", "1")},
       ${powerIterCtes("2", "mat2")},
+      ${rayleighCte("2", "mat2")},
       md AS (SELECT
           list_sum(list_transform(list_zip(svt.sv, uvec1.u),
             p -> CAST(p[1] AS DOUBLE) * p[2])) / (CAST(nn.n AS DOUBLE) * 1e6) AS md1,
@@ -2532,7 +2538,7 @@ object TrainingDataAnn {
       SELECT anchor, CAST(rk AS BIGINT) AS rk, neg_id, cos
       FROM rk WHERE rk <= 3 ORDER BY anchor, rk""",
     "x35b_semdedup_nprobe2" -> s"""
-      WITH RECURSIVE $ivfAssignedCtes,
+      WITH RECURSIVE $ivfCentroidCtes,
       probed AS (${nearestCellsSql("embeddings", "cent2", "<= 2")}),
       ${cellPairsCtes("probed", distinct = true)}
       $semdedupSelectSql""",

@@ -759,9 +759,8 @@ object TrainingDataLm {
     * tokenizer-fertility audit re-derived on the vocabulary x106
     * LEARNS instead of the fixed regex proxy. Segmentation is a
     * DICTIONARY computation ([[graft.text.Bpe.segmentDict]]): the 50
-    * merges replay once per DISTINCT word as row-local Column
-    * expressions (closed-form greedy via run parity — no UDF, no
-    * shuffle), and the dictionary broadcast-joins back to the
+    * merges replay once per DISTINCT word (plain Scala, no shuffle),
+    * and the dictionary broadcast-joins back to the
     * per-(source, word) count table; document text never moves after
     * the one counting scan. Per source: word occurrences, subword
     * tokens, single-token (fully merged) occurrences, and fertility =
@@ -946,26 +945,20 @@ object TrainingDataLm {
           * 1e4, 0).cast("long").as("sq"))
   }
 
-  /** DP unroll cap for [[viterbiDict]]: words longer than this are
-    * excluded from the dictionary by contract on BOTH engines (the
-    * fixture corpus caps at 8 chars; production raises the unroll). */
+  /** Word-length cap of the unigram dictionaries: words longer than
+    * this are excluded on BOTH engines. It is the contract shared with
+    * the oracle, which unrolls its DP to this many levels (the fixture
+    * corpus caps at 8 chars), and it keeps a word's piece count below
+    * 32, the range of [[viterbiWord]]'s enc tie-break. */
   private[graft] val ViterbiMaxW = 16
 
   /** x117's segmentation dictionary: per distinct word, the OPTIMAL
     * (max total log-probability) segmentation into 1-4-char pieces
     * under [[unigramPieceScores]] — SentencePiece's unigram-LM
     * Viterbi decode, the exact counterpart to x107's greedy BPE merge
-    * replay. The DP is a fixed [[ViterbiMaxW]]-level unroll of
-    * best(i) = max_j best(j) + sc(w[j+1..i]) over row-local Column
-    * expressions (no UDF, no iteration): each word carries a 64-slot
-    * score array (k = start·4 + len via one piece-keyed join), and
-    * the tie-break (score DESC, pieces ASC) rides a SECOND max-plus
-    * DP over enc = 32·score − pieces — integer dominance (any score
-    * gap ≥ 1 outweighs the ≤ ViterbiMaxW piece gap), so no struct
-    * comparison and no division ever enters the recurrence; the piece
-    * count decodes as np = 32·s_L − e_L. Like x107 this is a
-    * DICTIONARY computation: the merges replay once per distinct
-    * word, never per occurrence. */
+    * replay ([[viterbiWord]], ties broken toward fewer pieces). Like
+    * x107 this is a DICTIONARY computation: the DP runs once per
+    * distinct word, never per occurrence. */
   private[graft] def viterbiDict(docs: DataFrame): DataFrame =
     viterbiDictOn(unigramPieceScores(docs), docs
       .select(explode(wsTokens(lower(col("text")))).as("w"))
@@ -975,61 +968,85 @@ object TrainingDataLm {
   /** [[viterbiDict]] decoupled: decode `words` (a distinct single-
     * column `w` relation, each ≤ [[ViterbiMaxW]] chars) under an
     * ARBITRARY piece-score table — the split x167 needs (scores from
-    * the train slice, words from held-out). A word with a position no
-    * scored piece covers decodes to NULL wq/np (max-plus over an
-    * empty candidate set), and a word with NO scored piece at all
-    * drops from the output entirely (inner piece join) — both are the
-    * closed-inventory OOV signal x167 reports. */
+    * the train slice, words from held-out). Returns (w, np, wq). A
+    * word with a position no scored piece covers decodes to NULL
+    * np/wq, and a word with NO scored piece at all drops from the
+    * output entirely (inner piece join) — both are the closed-
+    * inventory OOV signal x167 reports. */
   private[graft] def viterbiDictOn(scores: DataFrame,
-      words: DataFrame): DataFrame = {
-    val cand = words.select(col("w"),
-        explode(flatten(transform(sequence(lit(0), length(col("w")) - 1),
-          j => transform(sequence(lit(1),
-              least(lit(4), length(col("w")) - j)),
+      words: DataFrame): DataFrame =
+    decodeWords(words, scores, None)
+      .select(col("w"), col("d._2").as("np"), col("d._3").as("wq"))
+
+  /** The Viterbi decode of each distinct word of `words` (column `w`):
+    * every 1-4-char piece at codepoint offset j with length l, slot
+    * k = j·4 + l, is joined to `scores` (p, sq) and gathered into one
+    * slot → score map per word, which [[viterbiWord]] decodes. With no
+    * `floor`, an unscored slot is skipped and a word no scored piece
+    * covers drops (inner join); with one, every word stays and an
+    * unscored slot scores `floor`. Returns (w, d), d = (pieces, np, wq)
+    * or NULL when no path covers the word.
+    * The decode is a column of the projection over the per-word
+    * aggregate, so a consumer that reads neither np nor wq prunes it,
+    * and the aggregate's uniqueness on w still lets the optimizer drop
+    * an outer join nothing reads (a typed `map` would hide both). */
+  private def decodeWords(words: DataFrame, scores: DataFrame,
+      floor: Option[Long]): DataFrame = {
+    val decode = udf { (w: String, pm: Map[Int, Long]) =>
+      viterbiWord(graft.text.Bpe.codepoints(w), k => pm.get(k).orElse(floor))
+        .orNull
+    }
+    val n = length(col("w"))
+    words.select(col("w"),
+        explode(flatten(transform(sequence(lit(0), n - 1),
+          j => transform(sequence(lit(1), least(lit(4), n - j)),
             l => struct((j * 4 + l).cast("int").as("k"),
               col("w").substr(j + 1, l).as("p")))))).as("c"))
       .select(col("w"), col("c.k").as("k"), col("c.p").as("p"))
-    // Both max-plus DPs ride ONE aggregate fold over the level index:
-    // the fold's tree is constant-size (unrolled projections would
-    // make Catalyst analysis dominate the query) and the recursion
-    // lives in the runtime accumulator array (f_i sits at slot i+1;
-    // slot 1 is the f_0 = 0 base). Candidate l > i contributes a NULL
-    // that greatest skips, so the candidates are 1..min(4,i).
-    val n = length(col("w"))
-    // The zero MUST declare its struct fields nullable (slice of an
-    // array that also holds a null struct): ArrayAggregate's result
-    // type is the zero's type, and the fold stores genuine NULLs
-    // (unscored pieces) — a non-nullable zero would make every
-    // downstream codegen'd reader treat the null slots as 0.
-    val zeroSE = slice(array(
-      struct(lit(0L).as("s"), lit(0L).as("e")),
-      struct(lit(null).cast("long").as("s"),
-        lit(null).cast("long").as("e"))), 1, 1)
-    val faE = aggregate(
-      sequence(lit(1), lit(ViterbiMaxW)),
-      zeroSE,
-      (acc, i) => {
-        def sc(l: Int) = element_at(col("scl"), (i - lit(l)) * 4 + lit(l))
-        def prev(l: Int) = element_at(acc, i - lit(l) + 1)
-        concat(acc, array(struct(
-          greatest((1 to 4).map(l => when(lit(l) <= i,
-            prev(l).getField("s") + sc(l))): _*).as("s"),
-          greatest((1 to 4).map(l => when(lit(l) <= i,
-            prev(l).getField("e") + sc(l) * 32L - 1L)): _*).as("e"))))
-      })
-    cand.join(scores, Seq("p"))
+      .join(scores, Seq("p"), if (floor.isEmpty) "inner" else "left")
       .groupBy(col("w"))
-      .agg(map_from_entries(collect_list(struct(col("k"), col("sq"))))
-        .as("pm"))
-      .withColumn("scl", transform(sequence(lit(1), lit(64)),
-        k => element_at(col("pm"), k)))
-      .select(col("w"), col("scl"))
-      .withColumn("fa", faE)
-      .select(col("w"),
-        element_at(col("fa"), (n + 1).cast("int")).getField("s").as("wq"),
-        element_at(col("fa"), (n + 1).cast("int")).getField("e").as("ef"))
-      .select(col("w"), (lit(32L) * col("wq") - col("ef")).as("np"),
-        col("wq"))
+      .agg(map_from_entries(collect_list(
+        when(col("sq").isNotNull, struct(col("k"), col("sq"))))).as("pm"))
+      .select(col("w"), decode(col("w"), col("pm")).as("d"))
+  }
+
+  /** One word's unigram Viterbi decode: `cps` are its codepoints (the
+    * unit of Spark's and DuckDB's `length`/`substr`) and `sc(k)` the
+    * score of the piece at slot k = j·4 + l (None: no scored piece).
+    * A suffix max-plus DP, g(j) = best enc of the chars from j on, over
+    * enc = 32·score − pieces — integer dominance (any score gap ≥ 1
+    * outweighs a piece gap below 32), so the optimum is the max-score
+    * path with the fewest pieces and no struct comparison enters the
+    * recurrence. A walk from the left then takes, at each position,
+    * the SMALLEST piece whose enc plus the best suffix after it equals
+    * the best suffix here — one fixed rule over the same integer DP,
+    * so the pieces are deterministic without any path-uniqueness
+    * assumption (x135's oracle unrolls the same DP and walk; x117's
+    * runs the forward DP, which reaches the same optimum). Returns the
+    * pieces, their count np and their summed score wq (1e-4 units), or
+    * None when no path of scored pieces covers the word. */
+  private def viterbiWord(cps: IndexedSeq[String],
+      sc: Int => Option[Long]): Option[(Seq[String], Long, Long)] = {
+    val n = cps.length
+    val g = new Array[Option[Long]](n + 1)
+    def enc(j: Int, l: Int): Option[Long] =
+      for (q <- sc(j * 4 + l); r <- g(j + l)) yield 32L * q - 1L + r
+    def lens(j: Int) = 1 to math.min(4, n - j)
+    g(n) = Some(0L)
+    for (j <- n - 1 to 0 by -1) g(j) = lens(j).flatMap(enc(j, _)).maxOption
+    g(0).map { _ =>
+      val pieces = Seq.newBuilder[String]
+      var j = 0
+      var wq = 0L
+      while (j < n) {
+        val l = lens(j).find(enc(j, _) == g(j)).get
+        pieces += cps.slice(j, j + l).mkString
+        wq += sc(j * 4 + l).get
+        j += l
+      }
+      val ps = pieces.result()
+      (ps, ps.size.toLong, wq)
+    }
   }
 
   /** X117: unigram-LM Viterbi segmentation — the OTHER standard
@@ -1071,97 +1088,22 @@ object TrainingDataLm {
     * path through a missing piece loses to any all-present path
     * (real quantized log-scores are ≥ −10⁷; the floor is −2⁴⁰), but
     * 16 floor pieces still sum far from Long overflow — so the DP
-    * stays total-function on both engines (NULL-free: DuckDB GREATEST
-    * returns NULL if ANY argument is NULL, Spark's skips them — the
-    * coalesced floor removes the divergence). */
+    * stays total-function on both engines (the oracle's DP is NULL-
+    * free: DuckDB GREATEST returns NULL if ANY argument is NULL). */
   private[graft] val NegSq = -(1L << 40)
 
-  /** Column-expression let (the graft.text.Bpe trick): binds `v` once
-    * through a single-element array + transform so `f`'s references
-    * read the bound value instead of re-evaluating the expression. */
-  private def letCol(v: Column, f: Column => Column): Column =
-    element_at(transform(array(v), f), 1)
-
   /** Viterbi decode of each distinct word under an ARBITRARY piece
-    * inventory `scores` (p, sq) — the x117 DP generalized twice for
-    * the EM trainer (x135): (a) pieces may be MISSING (left join +
-    * [[NegSq]] floor), so the same machinery decodes under a pruned
-    * vocabulary; (b) the chosen pieces are RECOVERED, not just
-    * counted — a SUFFIX max-plus DP (f_t = best enc-score of the
-    * last t chars; enc = 32·score − pieces, x117's integer-dominance
-    * tie-break) followed by a leftmost-smallest-piece unrolled walk:
-    * at each position take the SMALLEST l whose piece score + best
-    * suffix equals the current best — deterministic on both engines
-    * with no path-uniqueness assumption, because the walk re-applies
-    * one fixed rule to the same integer DP table. Returns (w, pieces,
-    * np, wq) with wq the plain summed log-score in 1e-4 units
-    * (recovered exactly as (enc + np)/32 — no second DP). Dictionary
-    * computation: O(|vocab|·16·4) row-local work after one
-    * piece-keyed join; nothing corpus-sized. */
-  private[graft] def unigramDecode(words: DataFrame, scores: DataFrame): DataFrame = {
-    val n = length(col("w"))
-    val cand = words.select(col("w"),
-        explode(flatten(transform(sequence(lit(0), n - 1),
-          j => transform(sequence(lit(1), least(lit(4), n - j)),
-            l => struct((j * 4 + l).cast("int").as("k"),
-              col("w").substr(j + 1, l).as("p")))))).as("c"))
-      .select(col("w"), col("c.k").as("k"), col("c.p").as("p"))
-    // Suffix DP and decode walk each ride ONE aggregate fold with a
-    // constant-size tree (unrolled projections would make Catalyst
-    // analysis dominate every decode; x135 runs three). f_t sits at
-    // accumulator slot t+1 (slot 1 = the f_0 = 0 base); a candidate
-    // l > t contributes a NULL that greatest skips, so the candidates
-    // are 1..min(4,t).
-    val faE = aggregate(
-      sequence(lit(1), lit(ViterbiMaxW)),
-      array(lit(0L)),
-      (acc, t) => concat(acc, array(
-        when(t <= n, greatest((1 to 4).map(l => when(lit(l) <= t,
-          lit(32L) * element_at(col("scl"), (n - t) * 4 + lit(l)) - 1L +
-            element_at(acc, t - lit(l) + 1))): _*))
-          .otherwise(lit(NegSq * 32L)))))
-    // walk accumulator: (r = chars left, ps = pieces so far); the
-    // chosen length is let-bound so the update and the substring read
-    // the same evaluation.
-    val walkE = aggregate(
-      sequence(lit(1), lit(ViterbiMaxW)),
-      struct(n.cast("long").as("r"),
-        array().cast("array<string>").as("ps")),
-      (acc, _) => {
-        val r = acc.getField("r")
-        def ok(l: Int) = {
-          val sc = lit(32L) * element_at(col("scl"),
-            ((n.cast("long") - r) * 4L + l).cast("int")) - 1L
-          (lit(l.toLong) <= r) &&
-            (sc + element_at(col("fa"),
-              (greatest(r - l, lit(0L)) + 1L).cast("int")) ===
-              element_at(col("fa"), (r + 1).cast("int")))
-        }
-        val lu = when(ok(1), 1L).when(ok(2), 2L).when(ok(3), 3L)
-          .otherwise(4L)
-        letCol(when(r > 0, lu), lc => struct(
-          (r - coalesce(lc, lit(0L))).as("r"),
-          when(lc.isNotNull, concat(acc.getField("ps"),
-            array(col("w").substr((n.cast("long") - r + 1).cast("int"),
-              lc.cast("int")))))
-            .otherwise(acc.getField("ps")).as("ps")))
-      })
-    cand.join(scores, Seq("p"), "left")
-      .groupBy(col("w"))
-      .agg(map_from_entries(collect_list(
-        when(col("sq").isNotNull, struct(col("k"), col("sq"))))).as("pm"))
-      .withColumn("scl", transform(sequence(lit(1), lit(64)),
-        k => coalesce(element_at(col("pm"), k), lit(NegSq))))
-      .select(col("w"), col("scl"))
-      .withColumn("fa", faE)
-      .withColumn("wk", walkE)
-      .select(col("w"), col("wk").getField("ps").as("pieces"),
-        element_at(col("fa"), (n + 1).cast("int")).as("ef"))
-      .select(col("w"), col("pieces"),
-        size(col("pieces")).cast("long").as("np"),
-        call_function("div",
-          col("ef") + size(col("pieces")).cast("long"), lit(32L)).as("wq"))
-  }
+    * inventory `scores` (p, sq) — [[viterbiWord]] generalized for the
+    * EM trainer (x135): pieces may be MISSING (left join + [[NegSq]]
+    * floor), so the same decode runs under a pruned vocabulary, and
+    * the chosen pieces are returned, not just counted. Returns
+    * (w, pieces, np, wq) with wq the summed log-score in 1e-4 units.
+    * Dictionary computation: one piece-keyed join, then one decode per
+    * distinct word; nothing corpus-sized. */
+  private[graft] def unigramDecode(words: DataFrame, scores: DataFrame): DataFrame =
+    decodeWords(words, scores, Some(NegSq))
+      .select(col("w"), col("d._1").as("pieces"), col("d._2").as("np"),
+        col("d._3").as("wq"))
 
   /** The Viterbi-EM loop for the x135 unigram tokenizer (Kudo 2018's
     * trainer under the hard-EM / Viterbi-count approximation): per
@@ -1600,8 +1542,9 @@ object TrainingDataLm {
               FROM documents WHERE $where)
         WHERE w <> '' GROUP BY w ORDER BY f DESC, w LIMIT $topV)"""
 
-  /** The 50 unrolled BPE training iterations over `wf` (v0 … v50 with
-    * per-iteration pair counts pc_k and argmax merge m_k). */
+  /** The 50 unrolled BPE training iterations over `wf` (pair counts
+    * pc_k and argmax merge m_k over v_{k-1}; v0 … v49, since nothing
+    * reads the state after the last merge). */
   private def bpeIterCtes: String = {
     val sb = new StringBuilder
     sb ++= s"""v0 AS (SELECT w, f,
@@ -1615,7 +1558,8 @@ object TrainingDataLm {
         COALESCE((SELECT a FROM pc$k ORDER BY cnt DESC, a, b LIMIT 1), chr(1)) AS a,
         COALESCE((SELECT b FROM pc$k ORDER BY cnt DESC, a, b LIMIT 1), chr(1)) AS b,
         COALESCE((SELECT cnt FROM pc$k ORDER BY cnt DESC, a, b LIMIT 1),
-          CAST(0 AS BIGINT)) AS cnt),
+          CAST(0 AS BIGINT)) AS cnt)"""
+      if (k < bpeK) sb ++= s""",
       v$k AS (${bpeApplySql(s"v${k - 1}, m$k m")})"""
     }
     sb.toString
@@ -1631,8 +1575,9 @@ object TrainingDataLm {
   private def wpTrainCtes: String =
     bpeWfCte("1 = 1", 1024) + ",\n      " + wpIterCtes
 
-  /** The 50 unrolled WordPiece iterations over `wf` (y0 … y50, unit
-    * counts yu_k, HUGEINT likelihood argmax ym_k). */
+  /** The 50 unrolled WordPiece iterations over `wf` (unit counts yu_k,
+    * HUGEINT likelihood argmax ym_k over y_{k-1}; y0 … y49, since
+    * nothing reads the state after the last merge). */
   private def wpIterCtes: String = {
     val sb = new StringBuilder
     sb ++= s"""y0 AS (SELECT w, f,
@@ -1662,7 +1607,8 @@ object TrainingDataLm {
         COALESCE((SELECT cb FROM ys$k ORDER BY q DESC, cnt DESC, a, b
           LIMIT 1), CAST(1 AS BIGINT)) AS cb,
         COALESCE((SELECT q FROM ys$k ORDER BY q DESC, cnt DESC, a, b
-          LIMIT 1), CAST(0 AS BIGINT)) AS q),
+          LIMIT 1), CAST(0 AS BIGINT)) AS q)"""
+      if (k < bpeK) sb ++= s""",
       y$k AS (${bpeApplySql(s"y${k - 1}, ym$k m")})"""
     }
     sb.toString
@@ -2051,7 +1997,7 @@ object TrainingDataLm {
       FROM pd GROUP BY cls ORDER BY cls""",
     "x135_unigram_em" -> {
       // one decode chain (suffix DP + leftmost walk) under `scoresCte`,
-      // mirroring unigramDecode column-for-column; CTE prefix c<chain>
+      // mirroring viterbiWord step for step; CTE prefix c<chain>
       def decodeSql(chain: Int, scoresCte: String): String = {
         val c = s"c$chain"
         val sb = new StringBuilder
@@ -2103,16 +2049,17 @@ object TrainingDataLm {
         FROM ${c}u16)"""
         sb.toString
       }
+      // the E-step: chain <chain>'s piece usage, weighted by word count
       def countsSql(chain: Int): String = s""",
       c${chain}cnt AS (SELECT u.p,
           CAST(SUM(wf.f) AS BIGINT) AS cnt
         FROM c${chain}dec d JOIN wf USING (w), unnest(d.pieces) AS u(p)
-        GROUP BY u.p),
-      c${chain}scs AS (SELECT p,
+        GROUP BY u.p)"""
+      // the M-step: `out`(p, sq), the (p, cnt) table `cnt` log-normalized
+      def scoresSql(out: String, cnt: String): String = s"""$out AS (SELECT p,
           CAST(ROUND(ln(CAST(cnt AS DOUBLE) / CAST(tt.t AS DOUBLE)) * 1e4, 0)
             AS BIGINT) AS sq
-        FROM c${chain}cnt, (SELECT CAST(SUM(cnt) AS BIGINT) AS t
-          FROM c${chain}cnt) tt)"""
+        FROM $cnt, (SELECT CAST(SUM(cnt) AS BIGINT) AS t FROM $cnt) tt)"""
       s"""WITH ${shortWordsCte("wf", "documents")},
       uwords AS (SELECT DISTINCT w FROM wf),
       ucand AS (
@@ -2123,11 +2070,9 @@ object TrainingDataLm {
         WHERE j + l <= length(w)),
       upc AS (SELECT p, CAST(SUM(f) AS BIGINT) AS cnt
         FROM ucand JOIN wf USING (w) GROUP BY p),
-      scs0 AS (SELECT p,
-          CAST(ROUND(ln(CAST(cnt AS DOUBLE) / CAST(tt.t AS DOUBLE)) * 1e4, 0)
-            AS BIGINT) AS sq
-        FROM upc, (SELECT CAST(SUM(cnt) AS BIGINT) AS t FROM upc) tt)
-      ${decodeSql(1, "scs0")}${countsSql(1)}
+      ${scoresSql("scs0", "upc")}
+      ${decodeSql(1, "scs0")}${countsSql(1)},
+      ${scoresSql("c1scs", "c1cnt")}
       ${decodeSql(2, "c1scs")}${countsSql(2)},
       uchars AS (SELECT DISTINCT p FROM ucand WHERE k % 4 = 1),
       usng AS (SELECT c.p, COALESCE(n.cnt, 0) + 1 AS cnt
@@ -2137,10 +2082,7 @@ object TrainingDataLm {
         FROM c2cnt WHERE length(p) > 1) WHERE rk <= 16),
       upv AS (SELECT p, CAST(cnt AS BIGINT) AS cnt FROM usng
         UNION ALL SELECT p, CAST(cnt AS BIGINT) AS cnt FROM umul),
-      upscs AS (SELECT p,
-          CAST(ROUND(ln(CAST(cnt AS DOUBLE) / CAST(tt.t AS DOUBLE)) * 1e4, 0)
-            AS BIGINT) AS sq
-        FROM upv, (SELECT CAST(SUM(cnt) AS BIGINT) AS t FROM upv) tt),
+      ${scoresSql("upscs", "upv")},
       unv AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_vocab FROM upv)
       ${decodeSql(3, "upscs")},
       ${shortSourceWordsCte("usw")}

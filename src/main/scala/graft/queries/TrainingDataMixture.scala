@@ -1646,7 +1646,9 @@ object TrainingDataMixture {
       p$i AS (SELECT source, CAST(COUNT(*) AS BIGINT)
           AS gain
         FROM inc WHERE $srcPred AND $covPred
-        GROUP BY source ORDER BY gain DESC, source LIMIT 1),
+        GROUP BY source ORDER BY gain DESC, source LIMIT 1)"""
+        // c<i>: the types covered after step i, read by step i + 1
+        if (i < 5) steps ++= s""",
       c$i AS (${
           if (i == 1) "SELECT DISTINCT i.g FROM inc i JOIN p1 ON i.source = p1.source"
           else s"SELECT g FROM c${i - 1} UNION SELECT i.g FROM inc i JOIN p$i ON i.source = p$i.source"})"""

@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Byte-pair-encoding tokenizer induction (Gage 1994; Sennrich et al.
@@ -19,18 +19,19 @@ import org.apache.spark.sql.functions._
   * precedent: per-iteration Spark jobs over a V-row relation would be
   * pure scheduling overhead). Segmentation at corpus scale is a
   * DICTIONARY computation: replay merges once per distinct word (a
-  * row-local Column expression — no UDF, no shuffle), then join the
-  * dictionary back to per-source word counts; text itself never moves.
+  * Scala function column running [[segmentWord]] — no shuffle), then
+  * join the dictionary back to per-source word counts; text itself
+  * never moves.
   *
   * Determinism contract: all counts are exact BIGINTs; the argmax
   * tie-break is (count DESC, left ASC, right ASC) under UTF-8 byte
   * order (Spark UTF8String ordering ≡ DuckDB binary collation; the
   * driver replica compares UTF-8 bytes explicitly); characters are
-  * Unicode codepoints on every side (Spark/DuckDB `substring`, driver
-  * `codePointAt`). Greedy left-to-right merge application is expressed
-  * closed-form via run-parity (see [[applyMergeLevel]]) so the Column
-  * expression, the oracle SQL, and the driver loop provably agree —
-  * including the overlapping-pair case (merge (a,a) on "aaa" →
+  * Unicode codepoints on every side (DuckDB `substring`, Scala
+  * `codePointAt` through [[codepoints]]). Greedy left-to-right merge application has one
+  * Scala definition, [[applyMerge]], shared by the trainers and the
+  * segmenters; the oracle SQL expresses it closed-form via run parity,
+  * and both agree on the overlapping-pair case (merge (a,a) on "aaa" →
   * ["aa","a"], never ["a","aa"]).
   */
 object Bpe {
@@ -64,8 +65,9 @@ object Bpe {
     out.result()
   }
 
-  /** Greedy left-to-right single-merge application (driver replica of
-    * [[applyMergeLevel]]'s run-parity expression). */
+  /** Greedy left-to-right single-merge application: the one definition
+    * the trainers and the dictionary segmenters replay (the oracle's
+    * run-parity SQL is its independent counterpart). */
   private[graft] def applyMerge(syms: Vector[String], a: String, b: String): Vector[String] = {
     val out = Vector.newBuilder[String]
     var i = 0
@@ -77,8 +79,7 @@ object Bpe {
     out.result()
   }
 
-  /** Replay a full merge sequence over one word (driver reference for
-    * specs and for the trainer's own vocabulary updates). */
+  /** Replay a full merge sequence over one word. */
   private[graft] def segmentWord(w: String, merges: Seq[(String, String)]): Vector[String] =
     merges.foldLeft(codepoints(w)) { case (s, (a, b)) => applyMerge(s, a, b) }
 
@@ -189,91 +190,35 @@ object Bpe {
     merges.result()
   }
 
-  /** Column expression: codepoint symbols of `w` (non-empty string). */
-  def charSyms(w: Column): Column =
-    transform(sequence(lit(1), length(w)), i => w.substr(i, lit(1)))
-
-  /** Column-expression let: binds `v` once through a single-element
-    * array + transform, so every reference `f` makes to it reads the
-    * bound VALUE instead of re-evaluating the expression (HOF lambdas
-    * have no native let-binding). */
-  private def let1(v: Column, f: Column => Column): Column =
-    element_at(transform(array(v), f), 1)
-
-  /** One greedy merge level over a bound syms VALUE, with the merge
-    * pair (a, b) as column expressions — used inside the
-    * [[segmentFold]] aggregate, where the level's intermediates are
-    * let-bound ([[let1]]), so nothing is re-evaluated.
-    *
-    * Closed-form greedy-left-to-right via run parity: position i
-    * matches iff (s[i], s[i+1]) = (a, b); a match is SELECTED iff the
-    * number of consecutive matches immediately before it is even
-    * (consecutive matches only arise when a = b, and within such a
-    * run greedy picks alternate positions from the left). The output
-    * keeps s[i] (or the merged symbol at selected positions) and
-    * drops positions whose predecessor was selected. */
-  private def applyMergeExpr(s: Column, a: Column, b: Column): Column =
-    let1(
-      transform(sequence(lit(1), size(s)), i =>
-        (i < size(s)) && element_at(s, i) === a &&
-          element_at(s, i + 1) === b),
-      ml => let1(
-        transform(sequence(lit(1), size(s)), i =>
-          element_at(ml, i) &&
-            (((i - 1 - coalesce(array_max(filter(sequence(lit(1), size(s)),
-              j => (j < i) && !element_at(ml, j))), lit(0))) % 2) === 0)),
-        sel =>
-          filter(transform(sequence(lit(1), size(s)), i =>
-            when((i > 1) && element_at(sel, i - 1), lit(null).cast("string"))
-              .when(element_at(sel, i), concat(a, b))
-              .otherwise(element_at(s, i))), x => x.isNotNull)))
-
-  /** Replay `merges` over an initial symbol array as ONE aggregate
-    * fold against the literal merge table: the fold's expression tree
-    * is constant-size regardless of merge count (a projection per
-    * merge would cost seconds of Catalyst analysis per segmentation),
-    * and the recursion lives in the runtime accumulator instead of
-    * the plan. */
-  private def segmentFold(s0: Column, merges: Seq[(String, String)]): Column =
-    if (merges.isEmpty) s0
-    else aggregate(
-      array(merges.map { case (a, b) =>
-        struct(lit(a).as("a"), lit(b).as("b")) }: _*),
-      s0,
-      (s, m) => applyMergeExpr(s, m.getField("a"), m.getField("b")))
-
   /** Segment the distinct-word dictionary `df` (column `w`, non-empty
-    * words): adds a `syms` array column holding each word's subword
-    * sequence under `merges`, replayed in order. Entirely row-local
-    * Column expressions — at 100 TB this runs once per DISTINCT word
-    * (dictionary-sized, not corpus-sized) and the result joins back
-    * to word counts. */
+    * words): one (w, syms) row per word, `syms` its subword sequence
+    * under `merges` replayed in order ([[segmentWord]]). At 100 TB this
+    * runs once per DISTINCT word (dictionary-sized, not corpus-sized)
+    * and the result joins back to word counts. The replay is a column
+    * of the projection, so a consumer that never reads `syms` prunes it
+    * (a typed `map` would be opaque to that). */
   def segmentDict(df: DataFrame, merges: Seq[(String, String)]): DataFrame =
-    df.withColumn("syms", segmentFold(charSyms(col("w")), merges))
+    df.select(col("w"),
+      udf((w: String) => segmentWord(w, merges)).apply(col("w")).as("syms"))
 
   /** [[segmentDict]] with per-word subword counts SNAPSHOTTED at the
-    * given merge depths (`stages`, ascending): ONE replay of the full
-    * merge sequence yields the whole vocabulary-size scaling curve —
-    * a per-stage re-segmentation would replay the shared prefix
-    * |stages| times for identical results (each stage folds only its
-    * slice of the merge table, continuing from the previous stage's
-    * bound column). A stage deeper than the learned sequence (early
-    * exhaustion) snapshots the final state: merges past exhaustion
-    * are identity, exactly the trainer's exhaustion-safe contract.
-    * Output: `w` + one `ns_<k>` count per stage. */
+    * given merge depths (`stages`): ONE replay of the full merge
+    * sequence per word yields the whole vocabulary-size scaling curve,
+    * since merge sequences are prefix-nested. A stage deeper than the
+    * learned sequence (early exhaustion) snapshots the final state:
+    * merges past exhaustion are identity, exactly the trainer's
+    * exhaustion-safe contract. Output: `w` + one `ns_<k>` count per
+    * stage. */
   def segmentDictStaged(df: DataFrame, merges: Seq[(String, String)],
       stages: Seq[Int]): DataFrame = {
-    var cur = df.withColumn("syms", charSyms(col("w")))
-    var done = 0
-    for (k <- stages) {
-      val upTo = math.min(k, merges.size)
-      if (upTo > done) {
-        cur = cur.withColumn("syms",
-          segmentFold(col("syms"), merges.slice(done, upTo)))
-        done = upTo
-      }
-      cur = cur.withColumn(s"ns_$k", size(col("syms")).cast("long"))
+    val counts = udf { (w: String) =>
+      // sizes(i): the symbol count after the first i merges
+      val sizes = merges.scanLeft(codepoints(w)) { case (s, (a, b)) =>
+        applyMerge(s, a, b) }.map(_.size.toLong)
+      stages.map(k => sizes(math.min(k, merges.size)))
     }
-    cur.select((col("w") +: stages.map(k => col(s"ns_$k"))): _*)
+    df.select(col("w"), counts(col("w")).as("ns"))
+      .select(col("w") +: stages.zipWithIndex.map { case (k, i) =>
+        col("ns")(i).as(s"ns_$k") }: _*)
   }
 }

@@ -122,4 +122,36 @@ class ContractSpec extends AnyFunSuite {
     }
     assert(marked > 1500, s"$marked entries marked")
   }
+
+  test("oracle CTEs: every WITH entry is read outside its own definition") {
+    // DuckDB 1.0 evaluates a MATERIALIZED entry even when nothing reads
+    // it, so an unread entry is pure oracle time. Quoted text and
+    // comments are cut the way the scanner skips them; a name counts as
+    // read wherever it appears outside its own entry and outside the
+    // head of another entry of the same name.
+    val skipped = "'[^']*'|\"[^\"]*\"|--[^\n]*".r
+    val head = "\\b(\\w+)\\s*(?:\\([^)]*\\)\\s*)?AS MATERIALIZED\\s*\\(".r
+    val unread = for {
+      (k, sql) <- SparkEntry.oracleSql.toSeq.sortBy(_._1)
+      cut = skipped.replaceAllIn(sql, m =>
+        if (m.matched.startsWith("--")) "" else m.matched.take(1) * 2)
+      heads = head.findAllMatchIn(cut).toSeq
+      headAt = heads.map(_.start).toSet
+      h <- heads
+      name = h.group(1)
+      // the entry spans its name to the ')' closing its body
+      end = {
+        var (i, depth) = (h.end, 1)
+        while (depth > 0) {
+          if (cut(i) == '(') depth += 1 else if (cut(i) == ')') depth -= 1
+          i += 1
+        }
+        i
+      }
+      if !s"(?i)\\b${java.util.regex.Pattern.quote(name)}\\b".r.findAllMatchIn(cut)
+        .exists(r => (r.start < h.start || r.start >= end) &&
+          !headAt(r.start))
+    } yield s"$k:$name"
+    assert(unread.isEmpty, s"${unread.size} unread WITH entries: ${unread.mkString(", ")}")
+  }
 }

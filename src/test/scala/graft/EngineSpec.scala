@@ -1576,7 +1576,7 @@ class EngineSpec extends AnyFunSuite {
       (4, "aa", "a", 2L)))
   }
 
-  test("x107 BPE segmentation Column ≡ driver replica (greedy overlap cases)") {
+  test("x107 BPE dictionary segmentation ≡ segmentWord per word (greedy overlap cases)") {
     import spark.implicits._
     import graft.text.Bpe
     val merges = Seq(("a", "a"), ("a", "b"), ("aa", "ab"))
@@ -2160,9 +2160,10 @@ class EngineSpec extends AnyFunSuite {
       }
       tot
     }
-    // 1) fixture-wide: the Column-expression DP is the reference DP
+    // 1) fixture-wide: the dictionary DP is the reference DP
     val docs = Tables.documents(spark, sf)
-    val scores = TrainingDataLm.unigramPieceScores(docs)
+    val scoreDf = TrainingDataLm.unigramPieceScores(docs)
+    val scores = scoreDf
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val dict = TrainingDataLm.viterbiDict(docs)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
@@ -2171,6 +2172,17 @@ class EngineSpec extends AnyFunSuite {
       val (rnp, rwq) = refDp(w, scores)
       assert((np, wq) == (rnp, rwq), s"word '$w': got ($np,$wq) ref ($rnp,$rwq)")
       assert(wq >= greedy(w, scores), s"word '$w': Viterbi below greedy")
+    }
+    // ... and so is x135's decoder over the same words and scores: its
+    // pieces rebuild the word and their scores sum to wq
+    val dec = TrainingDataLm.unigramDecode(dict.map(_._1).toSeq.toDF("w"), scoreDf)
+      .collect().map(r => (r.getString(0), r.getSeq[String](1), r.getLong(2),
+        r.getLong(3)))
+    assert(dec.map(_._1).sorted.toSeq == dict.map(_._1).sorted.toSeq)
+    dec.foreach { case (w, pieces, np, wq) =>
+      assert((np, wq) == refDp(w, scores), s"decode '$w': got ($np,$wq)")
+      assert(pieces.mkString == w && pieces.size == np, s"decode '$w': $pieces")
+      assert(pieces.map(scores).sum == wq, s"decode '$w': piece scores")
     }
     // 2) crafted corpus where greedy longest-match is provably wrong:
     // 'abcd' exists as a rare whole word, so greedy eats all 4 chars;
