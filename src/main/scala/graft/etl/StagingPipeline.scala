@@ -2,6 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, FloatType}
 import graft.core.SchemaMapping
 
 /** Generic staging ETL pipeline — the reference's canonical
@@ -35,17 +36,28 @@ final case class StagingPipeline(
       .na.drop("any", requiredKeys)
       .withColumn("data_carga_dw", loadTimestamp)
 
-  /** Run audits with a single aggregate job over input + output. */
+  /** Run audits with a single aggregate job over input + output: the
+    * input rows are counted in the same pass, and the control totals
+    * and null counts cover only the rows [[stage]] keeps — those whose
+    * `requiredKeys` are all present (`na.drop("any")` also drops a
+    * floating-point NaN key). */
   def audit(raw: DataFrame): PipelineAudit = {
-    val staged = stage(raw)
-    val outCols = staged.columns
+    val mapped = mapping(raw).withColumn("data_carga_dw", loadTimestamp)
+    val kept = requiredKeys.map { c =>
+      mapped.schema(c).dataType match {
+        case DoubleType | FloatType => col(c).isNotNull && !isnan(col(c))
+        case _ => col(c).isNotNull
+      }
+    }.foldLeft(lit(true))(_ && _)
+    val outCols = mapped.columns
     val aggs =
-      Seq(count(lit(1)).as("__rows")) ++
-        controlTotalCols.map(c => sum(col(c).cast("decimal(30,2)")).as(s"__tot_$c")) ++
-        outCols.map(c => sum(col(c).isNull.cast("long")).as(s"__nulls_$c"))
-    val row = staged.agg(aggs.head, aggs.tail: _*).collect()(0)
+      Seq(count(lit(1)).as("__rows_in"), count(when(kept, 1)).as("__rows")) ++
+        controlTotalCols.map(c =>
+          sum(when(kept, col(c).cast("decimal(30,2)"))).as(s"__tot_$c")) ++
+        outCols.map(c => count(when(kept && col(c).isNull, 1)).as(s"__nulls_$c"))
+    val row = mapped.agg(aggs.head, aggs.tail: _*).collect()(0)
     PipelineAudit(
-      rowsIn = raw.count(),
+      rowsIn = row.getAs[Long]("__rows_in"),
       rowsKept = row.getAs[Long]("__rows"),
       controlTotals = controlTotalCols
         .map(c => c -> row.getAs[java.math.BigDecimal](s"__tot_$c")).toMap,

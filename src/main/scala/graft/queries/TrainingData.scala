@@ -354,6 +354,24 @@ object TrainingData {
       (if (v < 0) -r else r).toLong
     }
 
+  /** One step of a task-side trainer (the GD classifier, the EM
+    * interpolation): a single RDD aggregate whose tasks add `k`
+    * order-free BIGINT sums per row through `add`, plus the row count
+    * in one more slot, and return them to the driver with no exchange.
+    * Returns (sums, rows), so a trainer's first step also gives it the
+    * row count it divides by, with no separate `count()`. */
+  private[graft] def foldStep[T](rows: org.apache.spark.rdd.RDD[T], k: Int)(
+      add: (Array[Long], T) => Unit): (Array[Long], Long) = {
+    val acc = rows.aggregate(new Array[Long](k + 1))((a, r) => {
+      add(a, r); a(k) += 1L; a
+    }, (a, b) => {
+      var i = 0
+      while (i <= k) { a(i) += b(i); i += 1 }
+      a
+    })
+    (java.util.Arrays.copyOf(acc, k), acc(k))
+  }
+
   /** The oracles' connected components over an undirected edge CTE
     * `p(id_a, id_b)`: `edges2`, both orientations, and the recursive
     * transitive closure `reach(a, b)` (the query needs WITH RECURSIVE;

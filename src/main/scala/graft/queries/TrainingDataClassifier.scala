@@ -30,8 +30,8 @@ object TrainingDataClassifier {
     * warmup; [[clfTable]] reads a table. */
   private[graft] def ensureClfModel(s: SparkSession, d: String): String =
     Store.materialize("clf", "v1", d, "documents") { path =>
-      val (tf, n) = qualityClfTf(s, d)
-      val steps = trainQualityClfSteps(tf, n)
+      val tf = clfFeatures(Tables.documents(s, d)).localCheckpoint()
+      val (steps, _) = trainQualityClfSteps(tf)
       s.createDataFrame(steps.zipWithIndex.flatMap { case (w, i) =>
           w.toSeq.zipWithIndex.map { case (v, b) => ((i + 1).toLong, b.toLong, v) }
         })
@@ -66,7 +66,7 @@ object TrainingDataClassifier {
     (col("zq").cast("double") / 1e9) / (col("tq").cast("double") / lit(100.0))
 
   /** The full (tq, snll) temperature grid of the weights `wdf` on the
-    * x36 val split of the feature table `tf` ([[qualityClfTf]]'s rows;
+    * x36 val split of the feature table `tf` ([[clfFeatures]]' rows;
     * [[clfFeatures]] is row-local, so filtering its rows is filtering
     * the docs): T ∈ {0.25 … 4.00} step 0.05, each candidate scored by
     * the 1e-6-quantized negative log-likelihood of the 1e-6-quantized
@@ -111,7 +111,7 @@ object TrainingDataClassifier {
     * three divisions run driver-side on two BigInt scalars. */
   val x173GradientNoise: Q = (s, d) => {
     val wdf = clfTable(s, d, "w")
-    gradientNoiseOn(s, clfTf1(s, d), wdf)
+    gradientNoiseOn(s, clfFeatures(Tables.documents(s, d)), wdf)
   }
 
   /** [[x173GradientNoise]] core over any sparse feature table +
@@ -196,9 +196,7 @@ object TrainingDataClassifier {
     val tfall = clfFeatures(docs).drop("y")
       .withColumn("y", when(col("doc_id") >= split, 1L).otherwise(0L))
       .localCheckpoint()
-    val trainTf = tfall.filter(balde < 90).localCheckpoint()
-    val nTrain = trainTf.count()
-    val w = trainQualityClf(trainTf, nTrain)
+    val (w, nTrain) = trainQualityClf(tfall.filter(balde < 90).localCheckpoint())
     val wdf = s.createDataFrame(
         w.toSeq.zipWithIndex.map { case (v, b) => (b.toLong, v) })
       .toDF("bucket", "wb")
@@ -315,7 +313,7 @@ object TrainingDataClassifier {
     * aggregation. Ratios pure-BIGINT [[intRoundHalfAway]]. */
   val x122ClfFilter: Q = (s, d) => {
     val wdf = clfTable(s, d, "w")
-    val tf = clfTf1(s, d)
+    val tf = clfFeatures(Tables.documents(s, d))
     clfScores(tf, wdf)
       .join(Tables.documents(s, d).select(col("doc_id"), col("source")),
         Seq("doc_id"))
@@ -351,7 +349,7 @@ object TrainingDataClassifier {
     * from scratch, re-proving the registry every run. */
   val x150El2nPrune: Q = (s, d) => {
     val wdf = clfTable(s, d, "w")
-    val (tf, _) = qualityClfTf(s, d)
+    val tf = clfFeatures(Tables.documents(s, d)).localCheckpoint()
     // checkpointed once: feeds the cut histogram AND the rollup
     val scored = clfScores(tf, wdf)
       .withColumn("el2n_q", abs(col("pq") - col("y") * 1000000L))
@@ -419,7 +417,7 @@ object TrainingDataClassifier {
     * vari_q)) — x157, x158 and x168's shared input. */
   private def trajDynamics(s: SparkSession, d: String): DataFrame = {
     val traj = clfTable(s, d, "traj")
-    val (tf, _) = qualityClfTf(s, d)
+    val tf = clfFeatures(Tables.documents(s, d)).localCheckpoint()
     import s.implicits._
     trajPqRows(tf, traj).map { case (docId, y, _, pqs) =>
       val k = pqs.length.toLong
@@ -554,7 +552,7 @@ object TrainingDataClassifier {
     * nothing pairwise, only TakeOrdered(20) shuffles. */
   val x159TracinSelf: Q = (s, d) => {
     val traj = clfTable(s, d, "traj")
-    val (tf, _) = qualityClfTf(s, d)
+    val tf = clfFeatures(Tables.documents(s, d)).localCheckpoint()
     import s.implicits._
     trajPqRows(tf, traj).map { case (docId, y, xs, pqs) =>
       var a = 0L
@@ -590,7 +588,7 @@ object TrainingDataClassifier {
     * One registry-scoring scan onto |sources| rows. */
   val x163CohenKappa: Q = (s, d) => {
     val wdf = clfTable(s, d, "w")
-    val tf = clfTf1(s, d)
+    val tf = clfFeatures(Tables.documents(s, d))
     val ct = clfScores(tf, wdf)
       .join(Tables.documents(s, d).select(col("doc_id"), col("source")),
         Seq("doc_id"))
@@ -627,7 +625,7 @@ object TrainingDataClassifier {
     * shrinks) plus the small-sample demotion it exists for. */
   val x164WilsonBound: Q = (s, d) => {
     val wdf = clfTable(s, d, "w")
-    val tf = clfTf1(s, d)
+    val tf = clfFeatures(Tables.documents(s, d))
     val ct = clfScores(tf, wdf)
       .join(Tables.documents(s, d).select(col("doc_id"), col("source")),
         Seq("doc_id"))
@@ -647,34 +645,6 @@ object TrainingDataClassifier {
       .orderBy(col("source"))
   }
 
-  /** x108's feature table: per doc, the 64-bucket hashed-BOW
-    * normalized counts (x111's featurizer — one bucket contract) plus
-    * the quality gate's own clipped signals (length, punctuation,
-    * stopword — buckets 64-66) and a bias (67), labelled by the
-    * engine's [[qualityScore]] ≥ 0.5 gate. Returns (tf, nDocs);
-    * docs with no tokens drop (inner semantics). Dense rows: nDocs
-    * is exactly the row count. Consumers whose downstream pins its
-    * own materialization ride this too; the five single-plan SQL
-    * scorers use [[clfTf1]]. */
-  private[graft] def qualityClfTf(s: SparkSession, d: String): (DataFrame, Long) = {
-    val tf = clfFeatures(Tables.documents(s, d)).localCheckpoint()
-    (tf, tf.count())
-  }
-
-  /** Single-pass feature table: NO checkpoint, NO count. For
-    * carriers that consume the features exactly once inside ONE
-    * adaptively-planned SQL job (the score-and-aggregate scorers
-    * x118/x122/x136/x163/x164): the build rides the consumer's own
-    * job, with no eager localCheckpoint + count() pair and no
-    * corpus-sized feature table a single-pass plan never re-reads.
-    * Deliberately NOT used by the carriers whose downstream pins its
-    * own materialization barrier (x138/x150/x168 checkpoint a derived
-    * table; x157/x158/x159 consume via queryExecution.toRdd): there
-    * the build misses the final-stage adaptive replanning and ran
-    * slower — those keep [[qualityClfTf]]. */
-  private[graft] def clfTf1(s: SparkSession, d: String): DataFrame =
-    clfFeatures(Tables.documents(s, d))
-
   /** The classifier's feature rows over ANY (doc_id, text) frame —
     * shared by training (x108), the staged consumers (x118/x122), and
     * the STREAMING admission gate
@@ -688,7 +658,12 @@ object TrainingDataClassifier {
     * fires — every downstream logit/gradient term round(w·0·1e9) is
     * then 0, so scoring and each GD step are row-local folds;
     * xs(64..66) are the [[qualitySignals]], xs(67) the bias 1.0, and
-    * y = [[qualityScore]] ≥ 0.5. One projection over one scan. */
+    * y = [[qualityScore]] ≥ 0.5. One projection over one scan. A
+    * caller that reads the table more than once (the trainers, the
+    * trajectory consumers, x138, x150) `localCheckpoint`s it; the
+    * single-plan scorers (x118, x122, x136, x163, x164, x173) build it
+    * inside their own job, where adaptive planning sees the whole
+    * plan. */
   private[graft] def clfFeatures(docs: DataFrame): DataFrame = {
     val signals = qualitySignals(col("text"), stopwords)
     hashedBowRows(docs)
@@ -702,21 +677,18 @@ object TrainingDataClassifier {
 
   /** A weight RELATION (bucket, wb — the registry/store schema)
     * pivoted to the 1-row broadcastable array form the dense scorer
-    * consumes: ws(b) = wb, in bucket order. */
-  private[graft] def clfWRow(wdf: DataFrame): DataFrame =
-    wdf.groupBy().agg(wsOf.as("ws"))
-
-  /** The aggregate behind [[clfWRow]]/[[trajRow]]: the group's wb
-    * values in bucket order, or an in-plan error unless its buckets
-    * are exactly 0..67 — zip_with against the 68-wide `xs` would
-    * otherwise null-pad a wrong-width relation into NULL scores. */
-  private def wsOf: Column = {
+    * consumes: ws(b) = wb, in bucket order, or an in-plan error unless
+    * its buckets are exactly 0..67 — zip_with against the 68-wide `xs`
+    * would otherwise null-pad a wrong-width relation into NULL scores. */
+  private[graft] def clfWRow(wdf: DataFrame): DataFrame = {
     val sorted = array_sort(collect_list(
       struct(col("bucket").cast("long").as("bucket"), col("wb"))))
-    when(transform(sorted, e => e.getField("bucket")) ===
-        sequence(lit(0L), lit(67L)), transform(sorted, e => e.getField("wb")))
-      .otherwise(raise_error(
-        lit("weight relation must hold exactly the 68 buckets 0..67")))
+    wdf.groupBy().agg(
+      when(transform(sorted, e => e.getField("bucket")) ===
+          sequence(lit(0L), lit(67L)), transform(sorted, e => e.getField("wb")))
+        .otherwise(raise_error(
+          lit("weight relation must hold exactly the 68 buckets 0..67")))
+        .as("ws"))
   }
 
   /** The dense-row logit under the trainer's exact quantization
@@ -730,37 +702,13 @@ object TrainingDataClassifier {
   /** [[clfProb]] of a 1e9-quantized logit `zq`. */
   private def pqOf(zq: Column): Column = clfProb(zq.cast("double") / 1e9)
 
-  /** The persisted per-step trajectory (step, bucket, wb) pivoted to
-    * ONE broadcastable row — snaps = array of (step, ws) in step
-    * order — so every trajectory consumer (x157/x158/x159/x168)
-    * scores all snapshots row-locally off the dense feature rows. */
-  private[graft] def trajRow(traj: DataFrame): DataFrame =
-    traj.groupBy(col("step"))
-      .agg(wsOf.as("ws"))
-      .groupBy()
-      .agg(array_sort(collect_list(struct(col("step"), col("ws"))))
-        .as("snaps"))
-
-  /** Per-snapshot TRUE-LABEL probabilities (1e-6-quantized, step
-    * order) of one dense feature row as one ARRAY column: the
-    * zip_with/aggregate folds stream both arrays once per step, which
-    * measured ~4× faster than the statically-unrolled twin (whose
-    * per-term array/struct re-extraction allocates wrappers and whose
-    * generated method is too large to stay on the codegen path). */
-  private[graft] def trajPtqs(snaps: Column, xs: Column, y: Column): Column =
-    transform(snaps, sn => {
-      val pq = pqOf(zqOf(xs, sn.getField("ws")))
-      when(y === 1L, pq).otherwise(lit(1000000L) - pq)
-    })
-
   /** [[intRoundHalfAway]] on task-side longs — the same integer chain
     * (SQL `div` on non-negative operands is Long `/`). */
   private[graft] def intRoundHalfAwayL(sv: Long, n: Long): Long =
     (if (sv < 0) -1L else 1L) * ((2L * math.abs(sv) + n) / (2L * n))
 
   /** The persisted trajectory collected to a step-ascending,
-    * bucket-ascending weight matrix — the driver-pinned twin of
-    * [[trajRow]]'s broadcast array (20×68 rows by contract, one
+    * bucket-ascending weight matrix (20×68 rows by contract, one
     * trivial job). */
   private def trajSnapsOf(traj: DataFrame): Array[Array[Double]] =
     traj.select(col("step"), col("bucket"), col("wb")).collect()
@@ -777,8 +725,8 @@ object TrainingDataClassifier {
     * [[logitQ]]/[[sigmaQ]] keep [[zqOf]]/[[pqOf]]'s operand order and
     * fold left-to-right like `aggregate`. Emits (doc_id, y, xs, pqs)
     * with pqs the step-ordered 1e-6-quantized P(y=1) per snapshot;
-    * the TRUE-LABEL ptq of [[trajPtqs]] is (y==1 ? pq : 1e6−pq),
-    * applied by each consumer. A ws/xs width mismatch fails the task ([[denseXs]]). */
+    * the TRUE-LABEL ptq is (y==1 ? pq : 1e6−pq), applied by each
+    * consumer. A ws/xs width mismatch fails the task ([[denseXs]]). */
   private[graft] def trajPqRows(tf: DataFrame, traj: DataFrame)
       : org.apache.spark.rdd.RDD[(Long, Long, Array[Double], Array[Long])] = {
     val snaps = trajSnapsOf(traj)
@@ -837,7 +785,7 @@ object TrainingDataClassifier {
 
   /** x108's trainer: full-batch logistic-regression gradient descent
     * over the dense feature table — `iters` steps at learning rate
-    * `eta`, weights driver-pinned between steps (the k-means shape:
+    * 16, weights driver-pinned between steps (the k-means shape:
     * model on the driver, data distributed). Determinism: per-doc
     * logits and per-bucket gradients are order-free BIGINT sums of
     * 1e9-/1e6-quantized terms (partition-order-proof); the logistic
@@ -845,49 +793,47 @@ object TrainingDataClassifier {
     * two engines' ≤1-ulp exp() difference cannot flip it (the x39
     * transcendental-quantization rule); the weight update is one
     * identical double chain on those integers, so driver and the
-    * oracle's unrolled per-iteration SQL agree exactly. */
-  private[graft] def trainQualityClf(tf: DataFrame, n: Long,
-      dFeat: Int = 68, iters: Int = 20, eta: Double = 16.0): Array[Double] =
-    trainQualityClfSteps(tf, n, dFeat, iters, eta).last
+    * oracle's unrolled per-iteration SQL agree exactly. Returns the
+    * final weights and the row count n the gradient is averaged over. */
+  private[graft] def trainQualityClf(tf: DataFrame, dFeat: Int = 68,
+      iters: Int = 20): (Array[Double], Long) = {
+    val (steps, n) = trainQualityClfSteps(tf, dFeat, iters)
+    (steps.last, n)
+  }
 
   /** [[trainQualityClf]] with the full per-step weight TRAJECTORY
     * (snapshot after each update — w₁…w₂₀): identical numerics, one
     * extra array copy per step. x157's dataset cartography scores
     * every doc under every snapshot, which is the published use of a
     * training trajectory nobody else consumes. */
-  private[graft] def trainQualityClfSteps(tf: DataFrame, n: Long,
-      dFeat: Int = 68, iters: Int = 20,
-      eta: Double = 16.0): Seq[Array[Double]] = {
+  private[graft] def trainQualityClfSteps(tf: DataFrame, dFeat: Int = 68,
+      iters: Int = 20): (Seq[Array[Double]], Long) = {
     val out = Seq.newBuilder[Array[Double]]
-    // ONE job per GD step: the gradient is an order-free per-dim
-    // BIGINT sum, so each step is a single RDD aggregate over the
-    // checkpointed feature rows — task results carry dFeat longs
-    // straight to the driver, with no exchange. The plan is resolved
-    // ONCE; the 20 steps re-run one pinned RDD chain. Per-row math
-    // replicates the SQL chain exactly ([[rndQ]]; exp is the same
-    // java.lang.Math.exp on both paths), so logits, σ, gradients and
-    // the trained weights are bit-identical to it.
+    // ONE job per GD step ([[foldStep]]): the gradient is an order-free
+    // per-dim BIGINT sum over the feature rows, and the step counts the
+    // rows it averages over. The plan is resolved ONCE; the steps
+    // re-run one pinned RDD chain. Per-row math replicates the SQL
+    // chain exactly ([[rndQ]]; exp is the same java.lang.Math.exp on
+    // both paths), so logits, σ, gradients and the trained weights are
+    // bit-identical to it.
     val rdd = tf.select(col("y"), col("xs")).queryExecution.toRdd
       .map(r => (r.getLong(0), denseXs(r.getArray(1).toDoubleArray(), dFeat)))
     var w = Array.fill(dFeat)(0.0)
+    var n = 0L
     for (_ <- 1 to iters) {
       val wl = w
-      val g = rdd.aggregate(new Array[Long](dFeat))((acc, row) => {
+      val (g, rows) = foldStep(rdd, dFeat) { (acc, row) =>
         val (y, xs) = row
         val pmy = sigmaQ(logitQ(wl, xs)).toDouble / 1e6 - y.toDouble
         var b = 0
         while (b < dFeat) { acc(b) += rndQ(pmy * xs(b) * 1e6); b += 1 }
-        acc
-      }, (a, b2) => {
-        var i = 0
-        while (i < dFeat) { a(i) += b2(i); i += 1 }
-        a
-      })
+      }
+      n = rows
       w = Array.tabulate(dFeat)(b =>
-        w(b) - eta * ((g(b).toDouble / 1e6) / n.toDouble))
+        w(b) - 16.0 * ((g(b).toDouble / 1e6) / n.toDouble))
       out += w
     }
-    out.result()
+    (out.result(), n)
   }
 
   /** X108: quality-classifier training — the model-based filter step
@@ -897,7 +843,7 @@ object TrainingDataClassifier {
     * classifier on labeled seed data" shape; here the rule gate IS
     * the labeller, which is exactly how reference-quality filters
     * are bootstrapped). Full-batch logistic GD, 20 steps, over
-    * hashed-BOW + gate-signal features ([[qualityClfTf]]); output is
+    * hashed-BOW + gate-signal features ([[clfFeatures]]); output is
     * the learned model itself — 68 (bucket, weight) rows. Scale
     * shape: ONE corpus scan builds the dense feature table
     * (localCheckpointed; at 100 TB features are staged ingest
@@ -908,8 +854,8 @@ object TrainingDataClassifier {
     * crafted separable micro-set AND accuracy > majority base rate
     * on the corpus. */
   val x108QualityClassifier: Q = (s, d) => {
-    val (tf, n) = qualityClfTf(s, d)
-    val w = trainQualityClf(tf, n)
+    val (w, _) = trainQualityClf(
+      clfFeatures(Tables.documents(s, d)).localCheckpoint())
     s.createDataFrame(w.toSeq.zipWithIndex.map { case (v, b) => (b.toLong, v) })
       .toDF("bucket", "wraw")
       .select(col("bucket"), round(col("wraw"), 6).as("weight"))
@@ -935,7 +881,7 @@ object TrainingDataClassifier {
     * [[intRoundHalfAway]]. */
   val x118ClfCalibration: Q = (s, d) => {
     val wdf = clfTable(s, d, "w")
-    val tf = clfTf1(s, d)
+    val tf = clfFeatures(Tables.documents(s, d))
     val mp = intRoundHalfAway(col("spq"), col("n_docs"))
     val pr = intRoundHalfAway(col("sy") * 1000000L, col("n_docs"))
     clfScores(tf, wdf)
@@ -968,7 +914,7 @@ object TrainingDataClassifier {
   val x136TempScaling: Q = (s, d) => {
     val wdf = clfTable(s, d, "w")
     val tdf = clfTable(s, d, "temp")
-    val tf = clfTf1(s, d)
+    val tf = clfFeatures(Tables.documents(s, d))
     val mp = intRoundHalfAway(col("spq"), col("n_docs"))
     val pr = intRoundHalfAway(col("sy") * 1000000L, col("n_docs"))
     clfLogits(tf, wdf)
@@ -1004,7 +950,7 @@ object TrainingDataClassifier {
     * when a cut predicts nothing positive. */
   val x138ClfRoc: Q = (s, d) => {
     val wdf = clfTable(s, d, "w")
-    val (tf, _) = qualityClfTf(s, d)
+    val tf = clfFeatures(Tables.documents(s, d)).localCheckpoint()
     // checkpointed once: the histogram feeds the AUC fold AND the
     // threshold sweep (the x131 scored-table precedent)
     val hist = clfScores(tf, wdf)

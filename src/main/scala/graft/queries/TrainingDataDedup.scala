@@ -802,10 +802,14 @@ object TrainingDataDedup {
       .localCheckpoint()
     val deg = edges.groupBy(col("a").as("doc_id"))
       .agg(count(lit(1)).as("dg"))
-    val nodes = corpus.select(col("doc_id"))
+    // the node count rides the checkpoint's own job as an in-plan
+    // counter (the ConnectedComponents convergence-count shape)
+    val nodesRaw = corpus.select(col("doc_id"))
       .join(deg, Seq("doc_id"), "left")
-      .na.fill(0L, Seq("dg")).localCheckpoint()
-    val nN = nodes.count()
+      .na.fill(0L, Seq("dg"))
+      .observe("x178_nodes", count(lit(1)).as("n"))
+    val nodes = nodesRaw.localCheckpoint()
+    val nN = nodesRaw.queryExecution.observedMetrics("x178_nodes").getLong(0)
     val teleQ = LogFit.halfAway(BigInt(15L) * 1000000000L,
       BigInt(100L) * nN).toLong
     val r0 = LogFit.halfAway(BigInt(1000000000L), BigInt(nN)).toLong

@@ -859,34 +859,28 @@ object TrainingDataLm {
     * EngineSpec off this exact replica. */
   private[graft] def emInterpLambdas(scored: DataFrame,
       iters: Int = 5): (Seq[Double], Long) = {
-    val t = scored.count()
-    // ONE job per EM step (the trainQualityClfSteps shape): the four
-    // responsibility sums are order-free BIGINT sums, so each step is
-    // a single RDD aggregate whose task results return 4 longs to the
-    // driver — no exchange, no per-step AQE stage job. Per-row math
-    // matches the oracle's SQL iteration exactly ([[rndQ]] = Spark's
-    // round(x,0).cast(long); the λ·p/den·1e6 chain is evaluated in
-    // the same operand order).
+    // ONE job per EM step ([[foldStep]]): the four responsibility sums
+    // are order-free BIGINT sums and the step counts the positions T
+    // it divides by. Per-row math matches the oracle's SQL iteration
+    // exactly ([[rndQ]] = Spark's round(x,0).cast(long); the
+    // λ·p/den·1e6 chain is evaluated in the same operand order).
     val rdd = scored.select(col("p0"), col("p1"), col("p2"), col("p3"))
       .queryExecution.toRdd
       .map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2),
         r.getDouble(3)))
     var l = Seq(0.25, 0.25, 0.25, 0.25)
+    var t = 0L
     for (_ <- 1 to iters) {
       val l0 = l(0); val l1 = l(1); val l2 = l(2); val l3 = l(3)
-      val q = rdd.aggregate(new Array[Long](4))((acc, p) => {
+      val (q, n) = foldStep(rdd, 4) { (acc, p) =>
         val (p0, p1, p2, p3) = p
         val den = l0 * p0 + l1 * p1 + l2 * p2 + l3 * p3
         acc(0) += rndQ(l0 * p0 / den * 1e6)
         acc(1) += rndQ(l1 * p1 / den * 1e6)
         acc(2) += rndQ(l2 * p2 / den * 1e6)
         acc(3) += rndQ(l3 * p3 / den * 1e6)
-        acc
-      }, (a, b) => {
-        var i = 0
-        while (i < 4) { a(i) += b(i); i += 1 }
-        a
-      })
+      }
+      t = n
       l = (0 to 3).map(o => q(o).toDouble / (t.toDouble * 1e6))
     }
     (l, t)

@@ -37,13 +37,21 @@ class EngineSpec extends AnyFunSuite {
       requiredKeys = Seq("pedido_id"),
       controlTotalCols = Seq("valor"),
       loadTimestamp = lit("2002-01-01 00:00:00").cast("timestamp"))
-    val raw = Tables.orders(spark, sf)
+    val orders = Tables.orders(spark, sf)
+    // one extra row with a null key: counted in, dropped by staging,
+    // and its price must stay out of the control total
+    val raw = orders.unionByName(orders.limit(1)
+      .withColumn("o_orderkey", lit(null).cast(orders.schema("o_orderkey").dataType))
+      .withColumn("o_totalprice", lit(1000000).cast(orders.schema("o_totalprice").dataType)))
     val audit = pipeline.audit(raw)
-    assert(audit.rowsIn == raw.count())
-    assert(audit.rowsKept == audit.rowsIn) // no null keys in fixture
-    assert(audit.controlTotals("valor").signum > 0)
-    assert(audit.nullCounts.values.forall(_ == 0))
+    assert(audit.rowsIn == orders.count() + 1)
+    assert(audit.rowsKept == audit.rowsIn - 1)
     val staged = pipeline.stage(raw)
+    assert(audit.rowsKept == staged.count())
+    assert(audit.controlTotals("valor").signum > 0)
+    assert(audit.controlTotals("valor") == staged
+      .agg(sum(col("valor").cast("decimal(30,2)"))).head().getDecimal(0))
+    assert(audit.nullCounts.values.forall(_ == 0))
     assert(staged.columns.contains("data_carga_dw"))
   }
 
@@ -1762,14 +1770,15 @@ class EngineSpec extends AnyFunSuite {
       (0 until 5).map(i => (i.toLong, 1L, Seq(1.0, 0.0, 1.0))) ++
       (5 until 10).map(i => (i.toLong, 0L, Seq(0.0, 1.0, 1.0)))
     val tf = rows.toDF("doc_id", "y", "xs")
-    val w = TrainingDataClassifier.trainQualityClf(tf, 10, dFeat = 3)
+    val (w, nCrafted) = TrainingDataClassifier.trainQualityClf(tf, dFeat = 3)
+    assert(nCrafted == 10L)
     assert(w(0) > 0 && w(1) < 0, s"signs: ${w.toSeq}")
     assert(w(0) > w(2) && w(2) > w(1), s"bias between: ${w.toSeq}")
     // every crafted doc classified correctly by the learned model
     assert(w(0) + w(2) > 0 && w(1) + w(2) <= 0)
     // corpus: the distilled model must beat the majority base rate
-    val (ctf, n) = TrainingDataClassifier.qualityClfTf(spark, sf)
-    val cw = TrainingDataClassifier.trainQualityClf(ctf, n)
+    val ctf = TrainingDataClassifier.clfFeatures(Tables.documents(spark, sf)).localCheckpoint()
+    val (cw, _) = TrainingDataClassifier.trainQualityClf(ctf)
     val byDoc = ctf.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2)))
     val acc = byDoc.count { case (_, y, xs) =>
@@ -1786,9 +1795,11 @@ class EngineSpec extends AnyFunSuite {
     // posexplode gradient, 68-key aggregation) replayed over the same
     // checkpointed feature table; the production trainer now computes
     // the identical integers in one RDD aggregate per step
-    val (tf, n) = TrainingDataClassifier.qualityClfTf(spark, sf)
+    val tf = TrainingDataClassifier.clfFeatures(Tables.documents(spark, sf)).localCheckpoint()
+    val n = tf.count()
     val dFeat = 68; val iters = 5; val eta = 16.0
-    val fast = TrainingDataClassifier.trainQualityClfSteps(tf, n, dFeat, iters, eta)
+    val (fast, nFast) = TrainingDataClassifier.trainQualityClfSteps(tf, dFeat, iters)
+    assert(nFast == n, "the first step's row count is the table's")
     var w = Array.fill(dFeat)(0.0)
     val ref = Seq.newBuilder[Array[Double]]
     for (_ <- 1 to iters) {
@@ -1818,6 +1829,7 @@ class EngineSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val scored = TrainingDataLm.emInterpScored(spark, sf)
     val (fast, t) = TrainingDataLm.emInterpLambdas(scored, iters = 3)
+    assert(t == scored.count(), "the first step's row count is the table's")
     var l = Seq(0.25, 0.25, 0.25, 0.25)
     for (_ <- 1 to 3) {
       val den = lit(l(0)) * col("p0") + lit(l(1)) * col("p1") +
@@ -1914,10 +1926,23 @@ class EngineSpec extends AnyFunSuite {
     // over the same feature table; the production consumers now
     // compute the identical integers in one task-side compiled fold
     val traj = TrainingDataClassifier.clfTable(spark, sf, "traj")
-    val (tf, _) = TrainingDataClassifier.qualityClfTf(spark, sf)
-    val ref = tf.crossJoin(broadcast(TrainingDataClassifier.trajRow(traj)))
-      .withColumn("ptqs",
-        TrainingDataClassifier.trajPtqs(col("snaps"), col("xs"), col("y")))
+    val tf = TrainingDataClassifier.clfFeatures(Tables.documents(spark, sf)).localCheckpoint()
+    // snaps = one row holding (step, ws) per step in step order, ws the
+    // step's weights in bucket order
+    val snaps = traj.groupBy(col("step"))
+      .agg(transform(array_sort(collect_list(struct(col("bucket"), col("wb")))),
+        e => e.getField("wb")).as("ws"))
+      .groupBy()
+      .agg(array_sort(collect_list(struct(col("step"), col("ws")))).as("snaps"))
+    val ref = tf.crossJoin(broadcast(snaps))
+      .withColumn("ptqs", transform(col("snaps"), sn => {
+        val pq = round((lit(1.0) / (lit(1.0) + exp(-(aggregate(
+          zip_with(sn.getField("ws"), col("xs"),
+            (wc, x) => round(wc * x * lit(1e9), 0).cast("long")),
+          lit(0L), (acc, v) => acc + v).cast("double") / 1e9)))) * 1e6,
+          0).cast("long")
+        when(col("y") === 1L, pq).otherwise(lit(1000000L) - pq)
+      }))
       .select(col("doc_id"), col("y"), col("ptqs"))
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getSeq[Long](2).toVector)))
@@ -2041,7 +2066,8 @@ class EngineSpec extends AnyFunSuite {
         r.getDouble(3), r.getDouble(4)))
     assert(rows.nonEmpty)
     // bins partition exactly the trainer's scored population
-    val (tf, n) = TrainingDataClassifier.qualityClfTf(spark, sf)
+    val tf = TrainingDataClassifier.clfFeatures(Tables.documents(spark, sf)).localCheckpoint()
+    val n = tf.count()
     assert(rows.map(_._2).sum == n)
     tf.unpersist()
     rows.foreach { case (bin, nd, mp, pr, gap) =>
@@ -2218,7 +2244,8 @@ class EngineSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getLong(4)))
     assert(rows.nonEmpty)
-    val (tf, n) = TrainingDataClassifier.qualityClfTf(spark, sf)
+    val tf = TrainingDataClassifier.clfFeatures(Tables.documents(spark, sf)).localCheckpoint()
+    val n = tf.count()
     assert(rows.map(_._2).sum == n, "per-source docs must cover every scored doc")
     tf.unpersist()
     rows.foreach { case (src, nd, nk, kr, na) =>
@@ -2471,7 +2498,8 @@ class EngineSpec extends AnyFunSuite {
   test("x136 temperature scaling: grid argmin ≡ store, NLL(T*) ≤ NLL(1), ECE does not regress") {
     val wdf = TrainingDataClassifier.clfTable(spark, sf, "w")
     val grid = TrainingDataClassifier.clfTempGrid(
-        TrainingDataClassifier.qualityClfTf(spark, sf)._1, wdf).collect()
+        TrainingDataClassifier.clfFeatures(Tables.documents(spark, sf)).localCheckpoint(),
+        wdf).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(grid.map(_._1).toSet == (25L until 401L by 5).toSet)
     val (tqStar, snllStar) = grid.minBy { case (tq, snll) => (snll, tq) }
@@ -2515,7 +2543,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("x138 ROC: AUC ≡ driver midrank recount, curves monotone, endpoints exact") {
     val wdf = TrainingDataClassifier.clfTable(spark, sf, "w")
-    val (tf, _) = TrainingDataClassifier.qualityClfTf(spark, sf)
+    val tf = TrainingDataClassifier.clfFeatures(Tables.documents(spark, sf)).localCheckpoint()
     val scored = TrainingDataClassifier.clfScores(tf, wdf).collect()
       .map(r => (r.getLong(1), r.getLong(2)))
     val pos = scored.filter(_._1 == 1L).map(_._2)
@@ -2549,7 +2577,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("x139 uncertainty sampling: budget respected, cut ≡ driver nearest-rank replay") {
     val wdf = TrainingDataClassifier.clfTable(spark, sf, "w")
-    val (tf, _) = TrainingDataClassifier.qualityClfTf(spark, sf)
+    val tf = TrainingDataClassifier.clfFeatures(Tables.documents(spark, sf)).localCheckpoint()
     val margins = TrainingDataClassifier.clfScores(tf, wdf).collect()
       .map(r => math.abs(r.getLong(2) - 500000L)).sorted
     val n = margins.length
@@ -2598,7 +2626,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("x142 label noise: thresholds ≡ driver replay, flags are the confident off-diagonal") {
     val wdf = TrainingDataClassifier.clfTable(spark, sf, "w")
-    val (tf, _) = TrainingDataClassifier.qualityClfTf(spark, sf)
+    val tf = TrainingDataClassifier.clfFeatures(Tables.documents(spark, sf)).localCheckpoint()
     val scored = TrainingDataClassifier.clfScores(tf, wdf).collect()
       .map(r => (r.getLong(1), r.getLong(2)))
     def meanQ(vs: Seq[Long]): Long =
@@ -2674,7 +2702,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("x163 kappa: chance correction bites on skewed sources; replica agrees") {
     val wdf = TrainingDataClassifier.clfTable(spark, sf, "w")
-    val (tf, _) = TrainingDataClassifier.qualityClfTf(spark, sf)
+    val tf = TrainingDataClassifier.clfFeatures(Tables.documents(spark, sf)).localCheckpoint()
     val scored = TrainingDataClassifier.clfScores(tf, wdf)
       .join(Tables.documents(spark, sf).select(col("doc_id"), col("source")),
         Seq("doc_id"))
@@ -2816,7 +2844,7 @@ class EngineSpec extends AnyFunSuite {
         rs.foreach(r => w(r.getLong(1).toInt) = r.getDouble(2))
         w
       }.toMap
-    val (tf, _) = TrainingDataClassifier.qualityClfTf(spark, sf)
+    val tf = TrainingDataClassifier.clfFeatures(Tables.documents(spark, sf)).localCheckpoint()
     val rows = tf.select("doc_id", "y", "xs").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2)))
     val si = rows.map { case (doc, y, xs) =>
@@ -2847,7 +2875,7 @@ class EngineSpec extends AnyFunSuite {
     val rows = SparkEntry.queries("x158_forgetting_events")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
-    val (tf, _) = TrainingDataClassifier.qualityClfTf(spark, sf)
+    val tf = TrainingDataClassifier.clfFeatures(Tables.documents(spark, sf)).localCheckpoint()
     val nDocs = tf.select("doc_id").distinct().count()
     assert(rows.map(_.getAs[Long]("n_docs")).sum == nDocs)
     rows.foreach { r =>
@@ -2878,7 +2906,7 @@ class EngineSpec extends AnyFunSuite {
     assert(w20 == reg, "final snapshot must equal the serving registry")
     val rows = SparkEntry.queries("x157_cartography")(spark, sf).collect()
     assert(rows.nonEmpty)
-    val (tf, _) = TrainingDataClassifier.qualityClfTf(spark, sf)
+    val tf = TrainingDataClassifier.clfFeatures(Tables.documents(spark, sf)).localCheckpoint()
     val nDocs = tf.select("doc_id").distinct().count()
     assert(rows.map(_.getAs[Long]("n_docs")).sum == nDocs,
       "regions must partition every doc exactly once")
@@ -3080,7 +3108,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("x150 EL2N: cut replayed driver-side; pruned mass is the easy-confident fifth") {
     val wdf = TrainingDataClassifier.clfTable(spark, sf, "w")
-    val (tf, _) = TrainingDataClassifier.qualityClfTf(spark, sf)
+    val tf = TrainingDataClassifier.clfFeatures(Tables.documents(spark, sf)).localCheckpoint()
     val el2n = TrainingDataClassifier.clfScores(tf, wdf).collect()
       .map(r => math.abs(r.getLong(2) - r.getLong(1) * 1000000L)).sorted
     val n = el2n.length
@@ -3882,8 +3910,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("a wrong-width weight relation fails in-plan instead of scoring NULLs") {
     val wdf = TrainingDataClassifier.clfTable(spark, sf, "w")
-    val traj = TrainingDataClassifier.clfTable(spark, sf, "traj")
-    val (tf, _) = TrainingDataClassifier.qualityClfTf(spark, sf)
+    val tf = TrainingDataClassifier.clfFeatures(Tables.documents(spark, sf)).localCheckpoint()
     def raised(run: => Any): Boolean = {
       val e = intercept[Exception](run)
       Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
@@ -3894,9 +3921,6 @@ class EngineSpec extends AnyFunSuite {
     assert(raised(TrainingDataClassifier.clfScores(tf, wdf.withColumn("bucket",
       when(col("bucket") === 0L, 68L).otherwise(col("bucket")))).collect()),
       "68 buckets with a gap at 0")
-    assert(raised(TrainingDataClassifier.trajRow(traj.filter(
-      !(col("step") === 3L && col("bucket") === 5L))).collect()),
-      "one trajectory step short a bucket")
     assert(TrainingDataClassifier.clfScores(tf, wdf).filter(col("pq").isNull).count() == 0)
   }
 
@@ -3913,12 +3937,12 @@ class EngineSpec extends AnyFunSuite {
     }
     for (w <- Seq(69, 67)) {
       val msg = s"feature row xs is $w wide, weights are 68 wide"
-      assert(failure(TrainingDataClassifier.trainQualityClf(tfOf(w), 2L, iters = 1))
+      assert(failure(TrainingDataClassifier.trainQualityClf(tfOf(w), iters = 1))
         .contains(msg), s"trainer, width $w")
       assert(failure(TrainingDataClassifier.trajPqRows(tfOf(w), traj).collect())
         .contains(msg), s"trajectory fold, width $w")
     }
-    assert(TrainingDataClassifier.trainQualityClf(tfOf(68), 2L, iters = 1).length == 68)
+    assert(TrainingDataClassifier.trainQualityClf(tfOf(68), iters = 1)._1.length == 68)
     assert(TrainingDataClassifier.trajPqRows(tfOf(68), traj).count() == 2)
   }
 
@@ -3926,7 +3950,19 @@ class EngineSpec extends AnyFunSuite {
     val x108 = SparkEntry.queries("x108_quality_classifier")
     x108(spark, sf) // count a warm build: a suite's first table read may add jobs
     val (_, jobs) = JobCount(spark)(x108(spark, sf))
-    assert(jobs == 23, s"x108 build jobs: $jobs")
+    assert(jobs == 21, s"x108 build jobs: $jobs")
+  }
+
+  test("x127, x175 and x178 builds run a pinned number of Spark jobs") {
+    // each build counts its rows inside a job it already runs: the EM
+    // and GD trainers in their first step, x178 in its nodes checkpoint
+    for ((name, want) <- Seq("x127_em_interpolation" -> 20,
+        "x175_drift_c2st" -> 28, "x178_pagerank_canonical" -> 29)) {
+      val q = SparkEntry.queries(name)
+      q(spark, sf) // count a warm build: a suite's first table read may add jobs
+      val (_, jobs) = JobCount(spark)(q(spark, sf))
+      assert(jobs == want, s"$name build jobs: $jobs")
+    }
   }
 
   test("the classifier store trains once: one feature build, one 20-step run") {
@@ -3946,10 +3982,10 @@ class EngineSpec extends AnyFunSuite {
       Tables.documents(spark, d).count() // a table's first read may add jobs
       val (path, jobs) = JobCount(spark)(TrainingDataClassifier.ensureClfModel(spark, d))
       store = Some(path)
-      // 23 jobs are x108's build (feature checkpoint, row count, 20 GD
-      // steps) and 7 write the three tables and fit the temperature; a
-      // second training run would add 23 more
-      assert(jobs == 30, s"classifier store build jobs: $jobs")
+      // 21 jobs are x108's build (feature checkpoint, 20 GD steps, the
+      // first also counting the rows) and 7 write the three tables and
+      // fit the temperature; a second training run would add 21 more
+      assert(jobs == 28, s"classifier store build jobs: $jobs")
       val traj = spark.read.parquet(s"$path/traj")
       assert(traj.count() == 20L * 68L)
       val w20 = traj.filter(col("step") === 20L).select("bucket", "wb")
