@@ -77,9 +77,63 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** The Column forms of the vector stages the queries and `graft.ml`
+  * share. Each two-vector fold accumulates left to right in double from
+  * `0.0`, the order of the oracle's `list_sum`, so both engines agree
+  * bit for bit. */
 object VectorExpressions {
+  import org.apache.spark.sql.functions._
+
   /** Column API for the native cosine. */
   def cosineSim(a: Column, b: Column): Column =
     GraftBridge.toColumn(CosineSimilarity(
       GraftBridge.toExpression(a), GraftBridge.toExpression(b)))
+
+  /** `v` when `a` and `b` are the same width; otherwise an in-plan error
+    * naming both widths, since `zip_with` would pad the shorter side
+    * with NULLs and turn the fold into a silent NULL. A NULL vector
+    * stays NULL (`size(NULL)` is NULL in Spark's default ANSI mode). */
+  private def sameWidth(a: Column, b: Column)(v: Column): Column =
+    when(size(a) =!= size(b), raise_error(concat(lit("vector widths differ: "),
+      size(a).cast("string"), lit(" vs "), size(b).cast("string"))))
+      .otherwise(v)
+
+  /** ⟨e, u⟩ against the literal vector `u`: each component of `e` in
+    * double times its DOUBLE literal (LSH and JL sign planes, PCA and
+    * OPQ eigenvectors). */
+  def dotLit(e: Column, u: Seq[Double]): Column = {
+    val ul = array(u.map(lit): _*)
+    sameWidth(e, ul)(aggregate(
+      zip_with(e, ul, (x, y) => x.cast("double") * y),
+      lit(0.0), (acc, v) => acc + v))
+  }
+
+  /** Exact squared L2 distance ‖a − b‖², both sides cast to double. */
+  def l2sq(a: Column, b: Column): Column =
+    sameWidth(a, b)(aggregate(
+      zip_with(a, b, (x, y) => {
+        val dd = x.cast("double") - y.cast("double"); dd * dd
+      }),
+      lit(0.0), (acc, v) => acc + v))
+
+  /** [[l2sq]] quantized to ROUND(·1e6) BIGINT — the ranking and
+    * assignment currency of the L2 indexes. */
+  def l2q(a: Column, b: Column): Column =
+    round(l2sq(a, b) * 1e6, 0).cast("long")
+
+  /** The element-wise residual a − b, subtracted in double and cast back
+    * to FLOAT. */
+  def residual(a: Column, b: Column): Column =
+    sameWidth(a, b)(zip_with(a, b,
+      (x, y) => (x.cast("double") - y.cast("double")).cast("float")))
+
+  /** The exact mean's encoding: a component as a whole number of 2^-24
+    * units (floor). A sum of these is an order-free integer, so a mean
+    * computed from it does not depend on partitioning. */
+  def enc24(x: Column): Column = floor(x.cast("double") * (1 << 24))
+
+  /** The exact mean's decoding: the [[enc24]] sum `sv` of `n` values
+    * back to a double mean. */
+  def dec24(sv: Column, n: Column): Column =
+    sv.cast("double") / (n.cast("double") * (1 << 24))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Pin
-import graft.functions.VectorExpressions.cosineSim
+import graft.functions.VectorExpressions.{cosineSim, dec24, enc24}
 
 /** Reusable IVF (inverted-file) ANN index: TRAIN ONCE, QUERY MANY —
   * the production split the fused x13 query can't express. `build`
@@ -57,27 +57,32 @@ object IvfIndex {
         c.getField("cid").as("cell")))).getField("cell").as("cell"))
   }
 
-  /** One Lloyd step: row-local assign, then element-wise mean per
-    * cell over integer 2^24-scaled components (order-free,
-    * engine-exact), quantized back to float. The per-component sums
-    * ride ONE map-side-combinable groupBy(cell) with dim sum
-    * columns. */
+  /** One Lloyd step: row-local assign, then [[recenter]] per cell. */
   private[graft] def lloydStep(emb: DataFrame, cents: DataFrame): DataFrame = {
     val ceRows = cents.select(col("ce")).head(1)
     if (ceRows.isEmpty)
       return cents.select(col("cid"), col("ce")).limit(0)
-    val dim = ceRows.head.getSeq[Float](0).length
+    recenter(assign(emb, cents), Nil, "embedding",
+      ceRows.head.getSeq[Float](0).length)
+  }
+
+  /** The Lloyd centroid step of both quantizers (this one, and
+    * [[PqIndex]] per subspace): per (`keys`, cell) of `assigned`, the
+    * element-wise mean of its `dim`-wide array column `vec` over the
+    * exact 2^24-scaled integer sums (`enc24`/`dec24`: order-free,
+    * engine-exact), quantized back to float, as (`keys`, cid, ce). The
+    * per-component sums ride ONE map-side-combinable groupBy with `dim`
+    * sum columns. */
+  private[graft] def recenter(assigned: DataFrame, keys: Seq[String],
+      vec: String, dim: Int): DataFrame = {
     val sums = (0 until dim).map(p =>
-      sum(floor(element_at(col("embedding"), p + 1).cast("double")
-        * (1 << 24))).as(s"sv$p"))
-    assign(emb, cents)
-      .groupBy(col("cell"))
+      sum(enc24(element_at(col(vec), p + 1))).as(s"sv$p"))
+    assigned
+      .groupBy((keys :+ "cell").map(col): _*)
       .agg(sums.head, (sums.tail :+ count(lit(1)).as("n")): _*)
-      .select(col("cell").as("cid"),
+      .select(keys.map(col) :+ col("cell").as("cid") :+
         array((0 until dim).map(p =>
-          (col(s"sv$p").cast("double")
-            / (col("n").cast("double") * (1 << 24))).cast("float")): _*)
-          .as("ce"))
+          dec24(col(s"sv$p"), col("n")).cast("float")): _*).as("ce"): _*)
   }
 
   /** Build the index over `emb` (columns `vec_id`, `embedding`).

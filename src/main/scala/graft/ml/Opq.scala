@@ -2,6 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.VectorExpressions.dotLit
 
 /** Optimized Product Quantization, parametric solution (Ge et al.
   * 2013, "Optimized Product Quantization for Approximate Nearest
@@ -228,10 +229,5 @@ object Opq {
   /** Row-local rotation: output coordinate o = ⟨x, row_o⟩ as the
     * cosSql-order fold against broadcast-literal eigenvector rows. */
   def rotateCol(emb: Column, rows: Seq[Array[Double]]): Column =
-    array(rows.map { row =>
-      aggregate(
-        zip_with(emb, array(row.toSeq.map(lit): _*),
-          (x, y) => x.cast("double") * y),
-        lit(0.0), (acc, x) => acc + x)
-    }: _*)
+    array(rows.map(row => dotLit(emb, row.toSeq)): _*)
 }

@@ -3,6 +3,7 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.Pin
+import graft.functions.VectorExpressions.l2q
 
 /** Product quantization (Jégou et al. 2011, "Product Quantization for
   * Nearest Neighbor Search"): split each d-dim vector into `m`
@@ -26,19 +27,6 @@ import graft.core.Pin
   * vectors distributed).
   */
 object PqIndex {
-
-  /** Exact squared L2 over two float arrays as an ordered left fold
-    * (both engines fold in index order — the cosSql contract). */
-  private[graft] def l2sq(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => {
-        val dd = x.cast("double") - y.cast("double"); dd * dd
-      }),
-      lit(0.0), (acc, v) => acc + v)
-
-  /** Quantized BIGINT distance — the ranking/assignment currency. */
-  private[graft] def l2q(a: Column, b: Column): Column =
-    round(l2sq(a, b) * 1e6, 0).cast("long")
 
   /** (vec_id, m, sub): the m `dsub`-wide subvectors of each vector. */
   private[graft] def subvectors(emb: DataFrame, m: Int, dsub: Int): DataFrame =
@@ -90,22 +78,6 @@ object PqIndex {
       col("sub"))
   }
 
-  /** Per-(subspace, cell) exact integer-mean recentering — one
-    * map-side-combinable groupBy(m, cell) with dsub sum columns. */
-  private[graft] def recenter(assigned: DataFrame, dsub: Int): DataFrame = {
-    val sums = (0 until dsub).map(p =>
-      sum(floor(element_at(col("sub"), p + 1).cast("double")
-        * (1 << 24))).as(s"sv$p"))
-    assigned
-      .groupBy(col("m"), col("cell"))
-      .agg(sums.head, (sums.tail :+ count(lit(1)).as("n")): _*)
-      .select(col("m"), col("cell").as("cid"),
-        array((0 until dsub).map(p =>
-          (col(s"sv$p").cast("double")
-            / (col("n").cast("double") * (1 << 24))).cast("float")): _*)
-          .as("ce"))
-  }
-
   /** Train the codebook: per subspace, seed from the k lowest-id
     * vectors' subvectors and run `iters` Lloyd steps. Returns the
     * pinned (m, cid, ce) table — m·k rows, corpus-size-free. */
@@ -115,7 +87,8 @@ object PqIndex {
     val seed = Pin(sub.filter(col("vec_id") < k)
       .select(col("m"), col("vec_id").cast("int").as("cid"),
         col("sub").as("ce")))
-    (0 until iters).foldLeft(seed)((c, _) => Pin(recenter(assign(sub, c), dsub)))
+    (0 until iters).foldLeft(seed)((c, _) => Pin(
+      IvfIndex.recenter(assign(sub, c), Seq("m"), "sub", dsub)))
   }
 
   /** Encode the corpus: (vec_id, m, code) — m small integers per

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{Store, Tables}
+import graft.functions.VectorExpressions.{dec24, enc24}
 import graft.text.TextFunctions._
 
 /** Large-scale training-data pipeline operators (beyond-reference
@@ -18,6 +19,15 @@ import graft.text.TextFunctions._
   * audits). Each family object holds its queries, its `ensure*`
   * persisted stores and its DuckDB oracle SQL; this object keeps the
   * helpers more than one family uses and [[prebuildCaches]].
+  *
+  * Shared numeric stages have one definition per engine. The vector
+  * Column stages (literal-vector dot, squared L2, float residual, the
+  * exact 2^24 mean's encode/decode pair) live in
+  * [[graft.functions.VectorExpressions]]; the Lloyd mean of the IVF and
+  * PQ quantizers is [[graft.ml.IvfIndex.recenter]]. This object holds
+  * the held-out add-one bigram model ([[AddOneBigram]]), the per-label
+  * centroids ([[labelCentroids]]) and the DuckDB mirrors of both and
+  * of the 2^24 pair ([[enc24Sql]], [[dec24Sql]]).
   *
   * Scale design:
   * - exact dedup = hash-groupBy on a fingerprint (one shuffle of
@@ -325,6 +335,74 @@ object TrainingData {
       .select(col("doc_id"), col("n_tok"),
         intRoundHalfAway(col("s_lp"), col("n_tok")).as("u_q"))
   }
+
+  /** The held-out add-one (Laplace) bigram reference model of x149,
+    * x166 and x171, trained on the token arrays `toks` of a train
+    * split `tr`: `uni(w1, c1)` unigram counts, `scal(nn, v)` the token
+    * total and V + 1, and `cnt2(g, c2)` bigram counts.
+    * p(w₂|w₁) = (c₂+1)/(c₁+V+1) is defined for unseen grams; [[lp]] is
+    * its −ln in integer 1e-4 nats. [[addOneUniCte]], [[addOneCnt2Cte]]
+    * and [[addOneLpSql]] are the DuckDB mirror. */
+  private[queries] final class AddOneBigram(tr: DataFrame) {
+    val uni: DataFrame = tr.select(explode(col("toks")).as("w1"))
+      .groupBy(col("w1")).agg(count(lit(1)).as("c1"))
+    val scal: DataFrame = uni.agg(sum(col("c1")).as("nn"),
+      (count(lit(1)) + 1L).as("v"))
+    val cnt2: DataFrame = tr
+      .select(explode(allShinglesOfToks(col("toks"), 2)).as("g"))
+      .groupBy(col("g")).agg(count(lit(1)).as("c2"))
+
+    /** −ln p(w₂|w₁) in 1e-4 units over the joined `c2`, `c1` and `v`. */
+    def lp: Column = round(-log(
+        (coalesce(col("c2"), lit(0L)).cast("double") + 1.0) /
+        (coalesce(col("c1"), lit(0L)).cast("double")
+          + col("v").cast("double"))) * 1e4, 0).cast("long")
+
+    /** `bi`, rows of a held-out bigram `g` and its first token `w1`,
+      * with the train counts, the scalars and `lp`. */
+    def score(bi: DataFrame): DataFrame =
+      bi.join(cnt2, Seq("g"), "left").join(uni, Seq("w1"), "left")
+        .crossJoin(broadcast(scal))
+        .withColumn("lp", lp)
+  }
+
+  /** [[AddOneBigram.uni]] over the token-array CTE `tr(toks)`. */
+  private[queries] def addOneUniCte: String =
+    """uni AS (SELECT w1, CAST(COUNT(*) AS BIGINT) AS c1
+        FROM (SELECT unnest(toks) AS w1 FROM tr) GROUP BY w1)"""
+
+  /** [[AddOneBigram.cnt2]] over the token-array CTE `tr(toks)`. */
+  private[queries] def addOneCnt2Cte: String =
+    """cnt2 AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS c2 FROM (
+          SELECT unnest(list_transform(range(1, greatest(len(toks) - 1, 0)
+            + 1), i -> toks[i] || ' ' || toks[i+1])) AS g FROM tr)
+        GROUP BY g)"""
+
+  /** [[AddOneBigram.lp]] over the joined `c2`, `c1` and `v`. */
+  private[queries] def addOneLpSql: String =
+    """CAST(ROUND(-LN(
+            (CAST(COALESCE(c2, 0) AS DOUBLE) + 1.0)
+            / (CAST(COALESCE(c1, 0) AS DOUBLE) + CAST(v AS DOUBLE)))
+            * 1e4, 0) AS BIGINT)"""
+
+  /** x28/x143's per-label centroids over `emb`'s `embedding`:
+    * (label, pos, comp, n), comp the element-wise exact mean from
+    * integer 2^24-scaled sums (`enc24`/`dec24`, order-free). */
+  private[queries] def labelCentroids(emb: DataFrame): DataFrame =
+    emb.select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
+      .groupBy(col("label"), col("pos"))
+      .agg(sum(enc24(col("v"))).as("sv"), count(lit(1)).as("n"))
+      .select(col("label"), col("pos"), dec24(col("sv"), col("n")).as("comp"),
+        col("n"))
+
+  /** [[graft.functions.VectorExpressions.enc24]] of `x` in DuckDB. */
+  private[queries] def enc24Sql(x: String): String =
+    s"FLOOR(CAST($x AS DOUBLE) * 16777216)"
+
+  /** [[graft.functions.VectorExpressions.dec24]] of the sum `sv` of
+    * `n` values in DuckDB. */
+  private[queries] def dec24Sql(sv: String, n: String): String =
+    s"CAST($sv AS DOUBLE) / (CAST($n AS DOUBLE) * 16777216)"
 
   /** Spark's `round(x, 0).cast("long")` on a double, replicated for
     * the trainer's task-side fold: Round on DoubleType evaluates

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{Pin, Store, Tables}
-import graft.functions.VectorExpressions.cosineSim
+import graft.functions.VectorExpressions.{cosineSim, dotLit, l2q, l2sq, residual}
 import graft.text.TextFunctions._
 import graft.queries.TrainingData._
 
@@ -53,24 +53,18 @@ object TrainingDataAnn {
     val emb = spread(s, Tables.embeddings(s, d))
     // Deterministic ±1 plane components, computed at PLAN time (md5
     // parity of "table-plane-dim") and embedded as literal arrays — the
-    // per-row work is then one zip_with+aggregate per plane instead of
-    // a 64-term unrolled expression (keeps codegen small and fast).
+    // per-row work is then one literal dot per plane instead of a
+    // 64-term unrolled expression (keeps codegen small and fast).
     def planeSigns(t: Int, p: Int): Seq[Double] = (0 until dims).map { i =>
       val h = java.security.MessageDigest.getInstance("MD5")
         .digest(s"$t-$p-$i".getBytes("UTF-8"))
       val v = ((h(0) & 0xff) << 8) | (h(1) & 0xff)
       if (v % 2 == 0) 1.0 else -1.0
     }
-    def sketch(e: Column, t: Int): Column = {
-      val bits = (0 until planes).map { p =>
-        val signs = array(planeSigns(t, p).map(lit): _*)
-        val proj = aggregate(
-          zip_with(e, signs, (x, sg) => x.cast("double") * sg),
-          lit(0.0), (acc, v) => acc + v)
-        when(proj > 0, lit(1 << p)).otherwise(lit(0))
-      }
-      bits.reduce(_ + _)
-    }
+    def sketch(e: Column, t: Int): Column =
+      (0 until planes).map { p =>
+        when(dotLit(e, planeSigns(t, p)) > 0, lit(1 << p)).otherwise(lit(0))
+      }.reduce(_ + _)
     val sk = emb.select(col("vec_id") +: col("embedding") +:
       (0 until tables).map(t => sketch(col("embedding"), t).as(s"b$t")): _*)
     val buckets = sk.select(col("vec_id"), col("embedding"),
@@ -208,23 +202,13 @@ object TrainingDataAnn {
       .orderBy(col("qid"), col("rk"))
 
   /** X28: per-label embedding centroids (mean pooling) — prototype
-    * vectors / class centroids over an embedding column. Element-wise
-    * mean via posexplode + the integer 2^24-scale sum (the exact
-    * order-free trick shared with [[graft.ml.IvfIndex.lloydStep]]),
-    * emitted as (label, pos, comp) scalars. Both shuffles are
+    * vectors / class centroids over an embedding column, emitted as
+    * (label, pos, comp, n) scalars by [[TrainingData.labelCentroids]]
+    * (the exact 2^24-scale mean, shared with x143). Both shuffles are
     * map-side combinable; nothing materializes per-label vector
     * lists. */
   val x28LabelCentroids: Q = (s, d) =>
-    Tables.embeddings(s, d)
-      .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy(col("label"), col("pos"))
-      .agg(sum(floor(col("v").cast("double") * (1 << 24))).as("sv"),
-        count(lit(1)).as("n"))
-      .select(col("label"), col("pos"),
-        (col("sv").cast("double") / (col("n").cast("double") * (1 << 24)))
-          .as("comp"),
-        col("n"))
-      .orderBy(col("label"), col("pos"))
+    labelCentroids(Tables.embeddings(s, d)).orderBy(col("label"), col("pos"))
 
   /** X34: metadata-filtered ANN — top-k cosine neighbors restricted
     * to a catalog predicate (here `label = 0`; production: language,
@@ -595,12 +579,9 @@ object TrainingDataAnn {
       v = w.map(_ / mx)
     }
     val u = { val s2 = v.map(x => x * x).sum; v.map(_ / math.sqrt(s2)) }
-    val ulit = array(u.map(lit): _*)
     Tables.embeddings(s, d)
       .select(col("vec_id"),
-        round(aggregate(
-          zip_with(col("embedding"), ulit, (x, y) => x.cast("double") * y),
-          lit(0.0), (acc, x) => acc + x), 6).as("pc1_score"))
+        round(dotLit(col("embedding"), u.toSeq), 6).as("pc1_score"))
       .orderBy(col("vec_id"))
   }
 
@@ -730,7 +711,7 @@ object TrainingDataAnn {
       .select(col("vec_id").as("qid"), col("m"), col("sub").as("qsub"))
     val adc = nce.join(broadcast(qs), Seq("m"))
       .filter(col("qid") =!= col("nid"))
-      .withColumn("dq", graft.ml.PqIndex.l2q(col("qsub"), col("ce")))
+      .withColumn("dq", l2q(col("qsub"), col("ce")))
       .groupBy(col("qid"), col("nid"))
       .agg(sum(col("dq")).as("adc_q"))
     val ex = emb.select(col("vec_id").as("nid"), col("embedding").as("ne"))
@@ -738,7 +719,7 @@ object TrainingDataAnn {
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))))
       .filter(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"),
-        graft.ml.PqIndex.l2q(col("qe"), col("ne")).as("ex_q"))
+        l2q(col("qe"), col("ne")).as("ex_q"))
     val rf = Window.partitionBy(col("qid")).orderBy(col("ex_q"), col("nid"))
     val rq = Window.partitionBy(col("qid")).orderBy(col("adc_q"), col("nid"))
     ex.join(adc, Seq("qid", "nid"))
@@ -862,15 +843,7 @@ object TrainingDataAnn {
     val pqCents = s.read.parquet(s"$path/pqcents")
     val storeCodes = s.read.parquet(s"$path/codes")
     val batch = Tables.embeddings(s, d).filter(col("vec_id") % 10 === 7)
-    val assigned = graft.ml.PqIndex.assign(
-      graft.ml.PqIndex.subvectors(batch, 1, 64), coarse)
-    val resEmb = assigned.as("a").join(broadcast(coarse.as("c")),
-        col("a.m") === col("c.m") && col("a.cell") === col("c.cid"))
-      .select(col("a.vec_id").as("vec_id"),
-        zip_with(col("a.sub"), col("c.ce"),
-          (x, y) => (x.cast("double") - y.cast("double")).cast("float"))
-          .as("embedding"))
-    val newCodes = graft.ml.PqIndex.encode(resEmb, pqCents)
+    val newCodes = graft.ml.PqIndex.encode(coarseResiduals(batch, coarse), pqCents)
     // the base store holds base ids ONLY (build-time held-out)
     val baseCnt = storeCodes
       .groupBy(col("m"), col("code")).agg(count(lit(1)).as("n_base"))
@@ -930,17 +903,9 @@ object TrainingDataAnn {
     * /pqcents and /codes. Returns the (vec_id, cell) map. */
   private def writeIvfPq(emb: DataFrame, path: String): DataFrame = {
     val coarse = graft.ml.PqIndex.trainCodebook(emb, m = 1, dsub = 64)
-    val assigned = graft.ml.PqIndex.assign(
-      graft.ml.PqIndex.subvectors(emb, 1, 64), coarse)
     // residuals are corpus-scaled and feed train, encode, AND the
     // cell map — checkpoint once, cluster-side
-    val resEmb = assigned.as("a").join(broadcast(coarse.as("c")),
-        col("a.m") === col("c.m") && col("a.cell") === col("c.cid"))
-      .select(col("a.vec_id").as("vec_id"), col("a.cell").as("cell"),
-        zip_with(col("a.sub"), col("c.ce"),
-          (x, y) => (x.cast("double") - y.cast("double")).cast("float"))
-          .as("embedding"))
-      .localCheckpoint()
+    val resEmb = coarseResiduals(emb, coarse).localCheckpoint()
     val pqCents = graft.ml.PqIndex.trainCodebook(
       resEmb.select(col("vec_id"), col("embedding")))
     val codes = graft.ml.PqIndex.encode(
@@ -950,6 +915,17 @@ object TrainingDataAnn {
     codes.write.mode("overwrite").parquet(s"$path/codes")
     resEmb.select(col("vec_id"), col("cell"))
   }
+
+  /** Each `emb` vector's nearest cell of the full-width coarse
+    * quantizer `coarse` (m = 1) and its residual from that centroid, as
+    * (vec_id, cell, embedding): the frame [[writeIvfPq]] trains and
+    * encodes on, and x110 encodes its batch with. */
+  private def coarseResiduals(emb: DataFrame, coarse: DataFrame): DataFrame =
+    graft.ml.PqIndex.assign(graft.ml.PqIndex.subvectors(emb, 1, 64), coarse)
+      .as("a").join(broadcast(coarse.as("c")),
+        col("a.m") === col("c.m") && col("a.cell") === col("c.cid"))
+      .select(col("a.vec_id").as("vec_id"), col("a.cell").as("cell"),
+        residual(col("a.sub"), col("c.ce")).as("embedding"))
 
   /** x110's BASE-ONLY twin of [[ensureIvfPqStore]]: identical
     * build —
@@ -981,14 +957,12 @@ object TrainingDataAnn {
     val probes = queries
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
       .crossJoin(broadcast(coarse))
-      .withColumn("dq", graft.ml.PqIndex.l2q(col("qe"), col("ce")))
+      .withColumn("dq", l2q(col("qe"), col("ce")))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("dq"), col("cid"))))
       .filter(col("rk") <= 4)
       .select(col("qid"), col("cid").as("cell"),
-        zip_with(col("qe"), col("ce"),
-          (x, y) => (x.cast("double") - y.cast("double")).cast("float"))
-          .as("qr"))
+        residual(col("qe"), col("ce")).as("qr"))
     val qrsub = probes
       .select(col("qid"), col("cell"), col("qr"),
         explode(sequence(lit(0), lit(7))).as("m"))
@@ -1001,7 +975,7 @@ object TrainingDataAnn {
       .join(cells.select(col("vec_id").as("nid"), col("cell")), Seq("nid"))
     nce.join(broadcast(qrsub), Seq("cell", "m"))
       .filter(col("qid") =!= col("nid"))
-      .withColumn("dq", graft.ml.PqIndex.l2q(col("qsub"), col("nce")))
+      .withColumn("dq", l2q(col("qsub"), col("nce")))
       .groupBy(col("qid"), col("nid"))
       .agg(sum(col("dq")).as("dist_q"))
   }
@@ -1044,7 +1018,7 @@ object TrainingDataAnn {
         Seq("qid"))
       .join(emb.select(col("vec_id").as("nid"), col("embedding").as("ne")),
         Seq("nid"))
-      .withColumn("dist_q", graft.ml.PqIndex.l2q(col("qe"), col("ne")))
+      .withColumn("dist_q", l2q(col("qe"), col("ne")))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("dist_q"), col("nid"))))
       .filter(col("rk") <= 4)
@@ -1096,9 +1070,7 @@ object TrainingDataAnn {
         Seq("cell"))
       .join(Tables.embeddings(s, d), Seq("vec_id"))
       .select(col("vec_id"),
-        zip_with(col("embedding"), col("cce"),
-          (x, y) => (x.cast("double") - y.cast("double")).cast("float"))
-          .as("r"))
+        residual(col("embedding"), col("cce")).as("r"))
     val dist = graft.ml.PqIndex.subvectors(
         res.select(col("vec_id"), col("r").as("embedding")), 8, 8)
       .join(codes, Seq("vec_id", "m"))
@@ -1106,7 +1078,7 @@ object TrainingDataAnn {
           col("ce"))),
         col("m") === col("cm") && col("code") === col("cid"))
       .select(col("vec_id"), col("m"), col("code"),
-        graft.ml.PqIndex.l2q(col("sub"), col("ce")).as("dq"))
+        l2q(col("sub"), col("ce")).as("dq"))
     val perCode = dist.groupBy(col("m"), col("code"))
       .agg(count(lit(1)).as("c"), sum(col("dq")).as("sd"))
     perCode.groupBy(col("m"))
@@ -1159,10 +1131,8 @@ object TrainingDataAnn {
       sums.zip(u).map { case (a, b) => a.toDouble * b }.sum / (n.toDouble * 1e6)
     def score(u: Array[Double], md: Double, lam: Double): Column =
       if (lam > 0)
-        round((aggregate(
-          zip_with(col("embedding"), array(u.map(lit).toSeq: _*),
-            (x, y) => x.cast("double") * y),
-          lit(0.0), (acc, x) => acc + x) - lit(md)) / lit(math.sqrt(lam)), 6)
+        round((dotLit(col("embedding"), u.toSeq) - lit(md))
+          / lit(math.sqrt(lam)), 6)
       else lit(null).cast("double")
     emb.select(col("vec_id"),
       score(u1, mdot(u1), lam1).as("w1"),
@@ -1475,25 +1445,18 @@ object TrainingDataAnn {
     val r = 16; val dims = 64
     val base = spread(s, Tables.embeddings(s, d))
       .select(col("vec_id"), col("embedding"),
-        array((0 until r).map { c =>
-          val signs = array(jlSigns(c, dims).map(lit): _*)
-          aggregate(zip_with(col("embedding"), signs,
-            (x, sg) => x.cast("double") * sg), lit(0.0), (acc, v) => acc + v)
-        }: _*).as("ys"))
+        array((0 until r).map(c =>
+          dotLit(col("embedding"), jlSigns(c, dims))): _*).as("ys"))
     val queries = base.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"),
         col("ys").as("qy"))
-    def l2(a: Column, b: Column) = aggregate(zip_with(a, b,
-      (x, y) => (x.cast("double") - y.cast("double"))
-        * (x.cast("double") - y.cast("double"))),
-      lit(0.0), (acc, v) => acc + v)
     val scored = base
       .select(col("vec_id").as("nid"), col("embedding").as("ne"),
         col("ys").as("ny"))
       .crossJoin(broadcast(queries))
       .filter(col("qid") =!= col("nid"))
-      .withColumn("d2o", l2(col("qe"), col("ne")))
-      .withColumn("d2p", l2(col("qy"), col("ny")))
+      .withColumn("d2o", l2sq(col("qe"), col("ne")))
+      .withColumn("d2p", l2sq(col("qy"), col("ny")))
     val wo = Window.partitionBy(col("qid"))
       .orderBy(round(col("d2o"), 6), col("nid"))
     val wp = Window.partitionBy(col("qid"))
@@ -1567,6 +1530,12 @@ object TrainingDataAnn {
 
   private def cosSql(a: String, b: String): String = s"(${cosExpr(a, b)})"
 
+  /** DuckDB mirror of [[graft.functions.VectorExpressions.dotLit]]:
+    * ⟨a, b⟩ with `a`'s components cast to DOUBLE, summed left to right. */
+  private def litDotSql(a: String, b: String): String =
+    s"""list_sum(list_transform(list_zip($a, $b),
+          p -> CAST(p[1] AS DOUBLE) * p[2]))"""
+
   /** The IVF training CTE chain (no leading WITH): cent0 seeds → two
     * deterministic Lloyd iterations (6dp-rounded argmax assign,
     * integer-sum element-wise mean quantized back to float) → `cent2`,
@@ -1574,9 +1543,9 @@ object TrainingDataAnn {
   private lazy val ivfCentroidCtes: String = s"""cent0 AS (
         SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id < 16),
       ${ivfAssignSql("embeddings", "cent0", "assign0")},
-      ${ivfCentSql("assign0", "cent1")},
+      ${centSql("assign0", "cent1", "", "embedding")},
       ${ivfAssignSql("embeddings", "cent1", "assign1")},
-      ${ivfCentSql("assign1", "cent2")}"""
+      ${centSql("assign1", "cent2", "", "embedding")}"""
 
   /** [[ivfCentroidCtes]] → `assigned` (vec_id, embedding, cell), every
     * vector in its nearest `cent2` cell — shared by [[ivfOracle]]
@@ -1600,31 +1569,35 @@ object TrainingDataAnn {
         SELECT vec_id, embedding, cid AS cell FROM (${cellRankSql(src, cents)})
         WHERE rk $keep"""
 
-  /** One IVF Lloyd step as two CTEs: `out` assigns each `src` vector to
-    * its 6dp-rounded argmax-cosine centroid of `cents`, and the
-    * centroid step averages an assignment element-wise on integer sums
-    * quantized back to float. */
+  /** An IVF Lloyd step's assignment CTE: `out` assigns each `src`
+    * vector to its 6dp-rounded argmax-cosine centroid of `cents`
+    * ([[centSql]] is the step's centroid CTE). */
   private def ivfAssignSql(src: String, cents: String, out: String): String = s"""
       $out AS (${nearestCellsSql(src, cents, "= 1")})"""
 
-  private def ivfCentSql(assign: String, out: String): String = s"""
+  /** The Lloyd centroid step of both quantizers
+    * ([[graft.ml.IvfIndex.recenter]]): `out(keys…, cid, ce)`, per
+    * (`keys`, cell) of `assigned` the element-wise exact 2^24 mean of
+    * its `vec` arrays, quantized back to float. `keys` is "" or a
+    * comma-terminated key list ("m, "). */
+  private def centSql(assigned: String, out: String, keys: String,
+      vec: String): String = s"""
       $out AS (
-        SELECT cell AS cid,
-          list(CAST(CAST(sv AS DOUBLE) / (CAST(n AS DOUBLE) * 16777216)
-            AS FLOAT) ORDER BY pos) AS ce
+        SELECT ${keys}cell AS cid,
+          list(CAST(${dec24Sql("sv", "n")} AS FLOAT) ORDER BY pos) AS ce
         FROM (
-          SELECT cell, i AS pos,
-            CAST(SUM(CAST(FLOOR(CAST(embedding[i] AS DOUBLE) * 16777216)
-              AS BIGINT)) AS BIGINT) AS sv,
+          SELECT ${keys}cell, i AS pos,
+            CAST(SUM(CAST(${enc24Sql(s"$vec[i]")} AS BIGINT)) AS BIGINT) AS sv,
             COUNT(*) AS n
-          FROM $assign, UNNEST(range(1, len(embedding) + 1)) AS t(i)
-          GROUP BY cell, i)
-        GROUP BY cell)"""
+          FROM $assigned, UNNEST(range(1, len($vec) + 1)) AS t(i)
+          GROUP BY ${keys}cell, i)
+        GROUP BY ${keys}cell)"""
 
-  /** Shared DuckDB generators for the PQ oracles (x99/x100): exact
-    * squared L2 as an ordered list fold; nearest-centroid assignment
-    * on ROUND(L2²·1e6) BIGINT with cid tie-break; exact integer-mean
-    * recentering (the Spark side's lloydStep conventions). */
+  /** Shared DuckDB generators for the PQ oracles (x99/x100; x125's
+    * exact distances use the L2 too): exact squared L2 as an ordered
+    * list fold ([[graft.functions.VectorExpressions.l2sq]]), and
+    * nearest-centroid assignment on ROUND(L2²·1e6) BIGINT with cid
+    * tie-break; the recentering is [[centSql]] keyed by subspace. */
   private def pqL2Sql(a: String, b: String): String =
     s"""list_sum(list_transform(list_zip($a, $b),
        p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
@@ -1637,19 +1610,6 @@ object TrainingDataAnn {
               ORDER BY CAST(ROUND(${pqL2Sql("s.sub", "c.ce")} * 1e6, 0) AS BIGINT),
                 c.cid) AS rk
           FROM $sub s JOIN $cents c ON c.m = s.m) WHERE rk = 1)"""
-
-  private def pqCentSql(assigned: String, out: String): String = s"""
-        $out AS (SELECT m, cell AS cid,
-          list(CAST(CAST(sv AS DOUBLE) / (CAST(n AS DOUBLE) * 16777216)
-            AS FLOAT) ORDER BY pos) AS ce
-        FROM (
-          SELECT m, cell, i AS pos,
-            CAST(SUM(CAST(FLOOR(CAST(sub[i] AS DOUBLE) * 16777216)
-              AS BIGINT)) AS BIGINT) AS sv,
-            COUNT(*) AS n
-          FROM $assigned, UNNEST(range(1, len(sub) + 1)) AS t(i)
-          GROUP BY m, cell, i)
-        GROUP BY m, cell)"""
 
   /** The element-wise residual a − b in double, back to FLOAT. */
   private def residualSql(a: String, b: String): String =
@@ -1696,9 +1656,9 @@ object TrainingDataAnn {
     * assignment against c2 as `out`. */
   private def pqLloydCtes(sub: String, sfx: String, out: String): String = Seq(
     pqAssignSql(sub, s"c0$sfx", s"a0$sfx"),
-    pqCentSql(s"a0$sfx", s"c1$sfx"),
+    centSql(s"a0$sfx", s"c1$sfx", "m, ", "sub"),
     pqAssignSql(sub, s"c1$sfx", s"a1$sfx"),
-    pqCentSql(s"a1$sfx", s"c2$sfx"),
+    centSql(s"a1$sfx", s"c2$sfx", "m, ", "sub"),
     pqAssignSql(sub, s"c2$sfx", out)).mkString(",")
 
   /** `sub(vec_id, m, sub)`: the 8 width-8 sub-vectors of `vec` over `from`. */
@@ -1863,8 +1823,7 @@ object TrainingDataAnn {
         FROM rotmap JOIN ulist ON ulist.c = rotmap.e),
       re AS (
         SELECT e.vec_id,
-          list(list_sum(list_transform(list_zip(e.embedding, rot.u),
-            p -> CAST(p[1] AS DOUBLE) * p[2])) ORDER BY rot.o) AS embedding
+          list(${litDotSql("e.embedding", "rot.u")} ORDER BY rot.o) AS embedding
         FROM embeddings e CROSS JOIN rot GROUP BY e.vec_id)"""
   }
 
@@ -2022,9 +1981,9 @@ object TrainingDataAnn {
       cent0 AS (SELECT vec_id AS cid, embedding AS ce FROM base
         ORDER BY vec_id LIMIT 16),
       ${ivfAssignSql("base", "cent0", "assign0")},
-      ${ivfCentSql("assign0", "cent1")},
+      ${centSql("assign0", "cent1", "", "embedding")},
       ${ivfAssignSql("base", "cent1", "assign1")},
-      ${ivfCentSql("assign1", "cent2")},
+      ${centSql("assign1", "cent2", "", "embedding")},
       ${ivfAssignSql("base", "cent2", "basecells")},
       ${ivfAssignSql("batch", "cent2", "addcells")},
       bc AS (SELECT cell, COUNT(*) AS n_base FROM basecells GROUP BY cell),
@@ -2195,8 +2154,7 @@ object TrainingDataAnn {
       s"""
       WITH pr AS (
         SELECT vec_id, c,
-          list_sum(list_transform(list_zip(embedding, s),
-            p -> CAST(p[1] AS DOUBLE) * p[2])) AS y
+          ${litDotSql("embedding", "s")} AS y
         FROM embeddings, (VALUES $sgn) AS sgn(c, s)),
       prl AS (SELECT vec_id, list(y ORDER BY c) AS ys
         FROM pr GROUP BY vec_id),
@@ -2207,9 +2165,7 @@ object TrainingDataAnn {
         FROM base WHERE vec_id < 5),
       sc AS (
         SELECT q.qid, c.vec_id AS nid,
-          list_sum(list_transform(list_zip(q.qe, c.embedding),
-            p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
-              * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)))) AS d2o,
+          ${pqL2Sql("q.qe", "c.embedding")} AS d2o,
           list_sum(list_transform(list_zip(q.qy, c.ys),
             p -> (p[1] - p[2]) * (p[1] - p[2]))) AS d2p
         FROM qs q, base c WHERE c.vec_id <> q.qid),
@@ -2256,11 +2212,10 @@ object TrainingDataAnn {
         FROM agg CROSS JOIN dims dd)
       SELECT vec_id, label, rms_z, rms_z > 1.2 AS is_outlier
       FROM rz ORDER BY vec_id""",
-    "x28_label_centroids" -> """
+    "x28_label_centroids" -> s"""
       SELECT label, CAST(i - 1 AS INT) AS pos,
-        CAST(SUM(CAST(FLOOR(CAST(embedding[i] AS DOUBLE) * 16777216)
-            AS BIGINT)) AS DOUBLE)
-          / (CAST(COUNT(*) AS DOUBLE) * 16777216) AS comp,
+        ${dec24Sql(s"SUM(CAST(${enc24Sql("embedding[i]")} AS BIGINT))", "COUNT(*)")}
+          AS comp,
         CAST(COUNT(*) AS BIGINT) AS n
       FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS t(i)
       GROUP BY label, i
@@ -2332,19 +2287,15 @@ object TrainingDataAnn {
       ${powerIterCtes("2", "mat2")},
       ${rayleighCte("2", "mat2")},
       md AS (SELECT
-          list_sum(list_transform(list_zip(svt.sv, uvec1.u),
-            p -> CAST(p[1] AS DOUBLE) * p[2])) / (CAST(nn.n AS DOUBLE) * 1e6) AS md1,
-          list_sum(list_transform(list_zip(svt.sv, uvec2.u),
-            p -> CAST(p[1] AS DOUBLE) * p[2])) / (CAST(nn.n AS DOUBLE) * 1e6) AS md2
+          ${litDotSql("svt.sv", "uvec1.u")} / (CAST(nn.n AS DOUBLE) * 1e6) AS md1,
+          ${litDotSql("svt.sv", "uvec2.u")} / (CAST(nn.n AS DOUBLE) * 1e6) AS md2
         FROM svt, uvec1, uvec2, nn)
       SELECT e.vec_id,
         CASE WHEN l1.lam > 0 THEN
-          ROUND((list_sum(list_transform(list_zip(e.embedding, uvec1.u),
-            p -> CAST(p[1] AS DOUBLE) * p[2])) - md.md1) / sqrt(l1.lam), 6)
+          ROUND((${litDotSql("e.embedding", "uvec1.u")} - md.md1) / sqrt(l1.lam), 6)
         END AS w1,
         CASE WHEN l2.lam > 0 THEN
-          ROUND((list_sum(list_transform(list_zip(e.embedding, uvec2.u),
-            p -> CAST(p[1] AS DOUBLE) * p[2])) - md.md2) / sqrt(l2.lam), 6)
+          ROUND((${litDotSql("e.embedding", "uvec2.u")} - md.md2) / sqrt(l2.lam), 6)
         END AS w2
       FROM embeddings e, uvec1, uvec2, lamt1 l1, lamt2 l2, md
       ORDER BY e.vec_id""",
@@ -2355,8 +2306,7 @@ object TrainingDataAnn {
       ${covMatrixCtes("mat")},
       ${powerIterCtes("1", "mat")}
       SELECT e.vec_id,
-        ROUND(list_sum(list_transform(list_zip(e.embedding, u.u),
-          p -> CAST(p[1] AS DOUBLE) * p[2])), 6) AS pc1_score
+        ROUND(${litDotSql("e.embedding", "u.u")}, 6) AS pc1_score
       FROM embeddings e, uvec1 u
       ORDER BY e.vec_id""",
     "x48_embed_correlation" -> s"""

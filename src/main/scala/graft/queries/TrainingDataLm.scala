@@ -600,8 +600,9 @@ object TrainingDataLm {
     * its least-likely tokens, so the mean NLL of each doc's worst 20%
     * of positions (Min-K%, k = 20) separates members from
     * non-members. Instantiation: the scoring model is the add-one
-    * bigram trained on the md5 train split (x149's reference); the
-    * pool is the held-out split (true non-members) plus a planted
+    * bigram trained on the md5 train split (x149's reference,
+    * [[TrainingData.AddOneBigram]]); the pool is the held-out split
+    * (true non-members) plus a planted
     * re-presentation of train docs (doc_id % 7 = 0, re-keyed +3M —
     * the x119/x128 deterministic-plant convention; they WERE
     * trained on). Per class: doc count and the mean/min/max Min-K%
@@ -626,13 +627,7 @@ object TrainingDataLm {
       .unionByName(train.filter(col("doc_id") % 7 === 0)
         .select((col("doc_id") + 3000000L).as("doc_id"), col("text"),
           lit("planted").as("cls")))
-    val tr = train.select(wsTokens(col("text")).as("toks"))
-    val uni = tr.select(explode(col("toks")).as("w1"))
-      .groupBy(col("w1")).agg(count(lit(1)).as("c1"))
-    val scal = uni.agg(sum(col("c1")).as("nn"),
-      (count(lit(1)) + 1L).as("v"))
-    val cnt2 = tr.select(explode(allShinglesOfToks(col("toks"), 2)).as("g"))
-      .groupBy(col("g")).agg(count(lit(1)).as("c2"))
+    val ref = new AddOneBigram(train.select(wsTokens(col("text")).as("toks")))
     val poolBi = pool
       .select(col("cls"), col("doc_id"), wsTokens(col("text")).as("toks"))
       .withColumn("n", size(col("toks"))).filter(col("n") >= 2)
@@ -643,13 +638,7 @@ object TrainingDataLm {
         concat_ws(" ", element_at(col("toks"), col("i") - 1),
           element_at(col("toks"), col("i"))).as("g"),
         element_at(col("toks"), col("i") - 1).as("w1"))
-    val scored = poolBi
-      .join(cnt2, Seq("g"), "left").join(uni, Seq("w1"), "left")
-      .crossJoin(broadcast(scal))
-      .withColumn("lp", round(-log(
-          (coalesce(col("c2"), lit(0L)).cast("double") + 1.0) /
-          (coalesce(col("c1"), lit(0L)).cast("double")
-            + col("v").cast("double"))) * 1e4, 0).cast("long"))
+    val scored = ref.score(poolBi)
     val wD = Window.partitionBy(col("doc_id"))
     val perDoc = scored
       .withColumn("rk", row_number().over(
@@ -1945,33 +1934,27 @@ object TrainingDataLm {
           AS DOUBLE) / 1e4 AS single_rate
       FROM res GROUP BY tokenizer ORDER BY tokenizer"""
     },
-    "x171_mink_membership" -> """
+    "x171_mink_membership" -> s"""
       WITH dd AS (SELECT doc_id, text,
           ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
             % 100 AS b
         FROM documents),
-      tr AS (SELECT regexp_split_to_array(trim(text), '\s+') AS toks
+      tr AS (SELECT regexp_split_to_array(trim(text), '\\s+') AS toks
         FROM dd WHERE b < 90),
       pool AS (SELECT doc_id, text, 'clean' AS cls FROM dd WHERE b >= 90
         UNION ALL
         SELECT doc_id + 3000000, text, 'planted' FROM dd
         WHERE b < 90 AND doc_id % 7 = 0),
-      uni AS (SELECT w1, CAST(COUNT(*) AS BIGINT) AS c1
-        FROM (SELECT unnest(toks) AS w1 FROM tr) GROUP BY w1),
+      $addOneUniCte,
       scal AS (SELECT CAST(COUNT(*) + 1 AS BIGINT) AS v FROM uni),
-      cnt2 AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS c2 FROM (
-          SELECT unnest(list_transform(range(1, greatest(len(toks) - 1, 0)
-            + 1), i -> toks[i] || ' ' || toks[i+1])) AS g FROM tr)
-        GROUP BY g),
+      $addOneCnt2Cte,
       pbi AS (SELECT cls, doc_id, i,
           toks[i-1] || ' ' || toks[i] AS g, toks[i-1] AS w1
         FROM (SELECT cls, doc_id,
-            regexp_split_to_array(trim(text), '\s+') AS toks
+            regexp_split_to_array(trim(text), '\\s+') AS toks
           FROM pool), unnest(range(2, len(toks) + 1)) AS t(i)),
       sc AS (SELECT cls, doc_id, i,
-          CAST(ROUND(-LN((CAST(COALESCE(c2, 0) AS DOUBLE) + 1.0)
-            / (CAST(COALESCE(c1, 0) AS DOUBLE) + CAST(v AS DOUBLE)))
-            * 1e4, 0) AS BIGINT) AS lp
+          $addOneLpSql AS lp
         FROM pbi LEFT JOIN cnt2 USING (g) LEFT JOIN uni USING (w1)
         CROSS JOIN scal),
       rk AS (SELECT cls, doc_id, lp,

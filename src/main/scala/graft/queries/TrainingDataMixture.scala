@@ -814,15 +814,7 @@ object TrainingDataMixture {
     * approximation — bit-exact by the proven recipe), and the
     * quantized entropy fold. The corpus is touched exactly once. */
   val x143VendiDiversity: Q = (s, d) => {
-    val cen = Tables.embeddings(s, d)
-      .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy(col("label"), col("pos"))
-      .agg(sum(floor(col("v").cast("double") * (1 << 24))).as("sv"),
-        count(lit(1)).as("n"))
-      .select(col("label"), col("pos"),
-        (col("sv").cast("double") / (col("n").cast("double") * (1 << 24)))
-          .as("comp"))
-      .collect()
+    val cen = labelCentroids(Tables.embeddings(s, d)).collect()
     val labels = cen.map(_.getInt(0)).distinct.sorted
     val dims = cen.map(_.getInt(1)).max + 1
     val c = Array.ofDim[Double](labels.length, dims)
@@ -846,7 +838,8 @@ object TrainingDataMixture {
     * (exposed for the EngineSpec crafted-corpus pin): current-model
     * loss = unigram MLE NLL over the POOL itself ([[uniDocNllQ]] —
     * RHO's training loss, the model HAS seen its own batch), minus
-    * reference loss = add-one (Laplace) bigram NLL under counts from
+    * reference loss = add-one (Laplace) bigram NLL
+    * ([[TrainingData.AddOneBigram]]) under counts from
     * the HELD-OUT train split — p(w₂|w₁) = (c₂+1)/(c₁+V), defined for
     * unseen grams, and crucially NEVER trained on the pool docs being
     * scored: a corpus-wide MLE reference would memorize singleton
@@ -855,24 +848,13 @@ object TrainingDataMixture {
     * Pool docs need ≥1 bigram (inner semantics). */
   private[graft] def rholossRedQ(pool: DataFrame, train: DataFrame): DataFrame = {
     val u = uniDocNllQ(pool).select(col("doc_id"), col("u_q"))
-    val tr = train.select(wsTokens(col("text")).as("toks"))
-    val uni = tr.select(explode(col("toks")).as("w1"))
-      .groupBy(col("w1")).agg(count(lit(1)).as("c1"))
-    val vv = uni.agg((count(lit(1)) + 1L).as("v"))
-    val cnt2 = tr.select(explode(allShinglesOfToks(col("toks"), 2)).as("g"))
-      .groupBy(col("g")).agg(count(lit(1)).as("c2"))
+    val ref = new AddOneBigram(train.select(wsTokens(col("text")).as("toks")))
     val poolBi = pool.select(col("doc_id"), wsTokens(col("text")).as("toks"))
       .select(col("doc_id"), explode(allShinglesOfToks(col("toks"), 2)).as("g"))
       .withColumn("w1", substring_index(col("g"), " ", 1))
-    val r = poolBi
-      .join(cnt2, Seq("g"), "left").join(uni, Seq("w1"), "left")
-      .crossJoin(broadcast(vv))
-      .withColumn("lp_q", round(-log(
-          (coalesce(col("c2"), lit(0L)).cast("double") + 1.0) /
-          (coalesce(col("c1"), lit(0L)).cast("double")
-            + col("v").cast("double"))) * 1e4, 0).cast("long"))
+    val r = ref.score(poolBi)
       .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("nb"), sum(col("lp_q")).as("s2"))
+      .agg(count(lit(1)).as("nb"), sum(col("lp")).as("s2"))
       .select(col("doc_id"), intRoundHalfAway(col("s2"), col("nb")).as("r_q"))
     u.join(r, Seq("doc_id"))
       .select(col("doc_id"), (col("u_q") - col("r_q")).as("red_q"))
@@ -1146,8 +1128,9 @@ object TrainingDataMixture {
   /** x166's per-domain EXCESS LOSS table: for every source, the mean
     * held-out per-token NLL under the weak PROXY model (add-one
     * unigram) minus under the stronger REFERENCE model (add-one
-    * bigram, x149's reference recipe), both trained on the md5-balde
-    * train split (< 90) and evaluated on the held-out split (≥ 90) —
+    * bigram, x149's [[TrainingData.AddOneBigram]]), both trained on
+    * the md5-balde train split (< 90) and evaluated on the held-out
+    * split (≥ 90) —
     * never on their own training text (the [[rholossRedQ]]
     * self-memorization lesson). excess = max(0, ℓ_proxy − ℓ_ref) in
     * integer 1e-4 nats: the headroom training can still buy on that
@@ -1158,17 +1141,11 @@ object TrainingDataMixture {
     * held-out scoring scans, all collapsing onto |sources| rows. */
   private[graft] def doremiExcessQ(docs: DataFrame): DataFrame = {
     val balde = splitBalde(col("doc_id"))
-    val tr = docs.filter(balde < 90)
-      .select(wsTokens(col("text")).as("toks"))
+    val ref = new AddOneBigram(docs.filter(balde < 90)
+      .select(wsTokens(col("text")).as("toks")))
     val ho = docs.filter(balde >= 90).select(col("source"), col("text"))
-    val uni = tr.select(explode(col("toks")).as("w1"))
-      .groupBy(col("w1")).agg(count(lit(1)).as("c1"))
-    val scal = uni.agg(sum(col("c1")).as("nn"),
-      (count(lit(1)) + 1L).as("v"))
-    val cnt2 = tr.select(explode(allShinglesOfToks(col("toks"), 2)).as("g"))
-      .groupBy(col("g")).agg(count(lit(1)).as("c2"))
     val eu = ho.select(col("source"), explode(wsTokens(col("text"))).as("w1"))
-      .join(uni, Seq("w1"), "left").crossJoin(broadcast(scal))
+      .join(ref.uni, Seq("w1"), "left").crossJoin(broadcast(ref.scal))
       .withColumn("lp", round(-log(
           (coalesce(col("c1"), lit(0L)).cast("double") + 1.0) /
           (col("nn") + col("v")).cast("double")) * 1e4, 0).cast("long"))
@@ -1176,16 +1153,11 @@ object TrainingDataMixture {
       .agg(count(lit(1)).as("nu"), sum(col("lp")).as("su"))
       .select(col("source"), intRoundHalfAway(col("su"), col("nu"))
         .as("ell_uni_q"))
-    val eb = ho.select(col("source"), wsTokens(col("text")).as("toks"))
+    val hoBi = ho.select(col("source"), wsTokens(col("text")).as("toks"))
       .select(col("source"),
         explode(allShinglesOfToks(col("toks"), 2)).as("g"))
       .withColumn("w1", substring_index(col("g"), " ", 1))
-      .join(cnt2, Seq("g"), "left").join(uni, Seq("w1"), "left")
-      .crossJoin(broadcast(scal))
-      .withColumn("lp", round(-log(
-          (coalesce(col("c2"), lit(0L)).cast("double") + 1.0) /
-          (coalesce(col("c1"), lit(0L)).cast("double")
-            + col("v").cast("double"))) * 1e4, 0).cast("long"))
+    val eb = ref.score(hoBi)
       .groupBy(col("source"))
       .agg(count(lit(1)).as("nb"), sum(col("lp")).as("sb"))
       .select(col("source"), intRoundHalfAway(col("sb"), col("nb"))
@@ -1363,13 +1335,9 @@ object TrainingDataMixture {
           (CASE WHEN s1 < 0 THEN -1 ELSE 1 END)
             * ((2 * abs(s1) + n_tok) // (2 * n_tok)) AS u_q
         FROM uagg),
-      uni AS (SELECT w1, CAST(COUNT(*) AS BIGINT) AS c1
-              FROM (SELECT unnest(toks) AS w1 FROM tr) GROUP BY w1),
+      $addOneUniCte,
       vv AS (SELECT CAST(COUNT(*) + 1 AS BIGINT) AS v FROM uni),
-      cnt2 AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS c2 FROM (
-          SELECT unnest(list_transform(range(1, greatest(len(toks) - 1, 0)
-            + 1), i -> toks[i] || ' ' || toks[i+1])) AS g FROM tr)
-        GROUP BY g),
+      $addOneCnt2Cte,
       pbi AS (SELECT doc_id, g, split_part(g, ' ', 1) AS w1 FROM (
           SELECT doc_id,
             unnest(list_transform(range(1, greatest(len(toks) - 1, 0)
@@ -1378,10 +1346,7 @@ object TrainingDataMixture {
               regexp_split_to_array(trim(text), '\\s+') AS toks
             FROM pool))),
       ragg AS (SELECT p.doc_id, CAST(COUNT(*) AS BIGINT) AS nb,
-          CAST(SUM(CAST(ROUND(-LN(
-            (CAST(COALESCE(c2, 0) AS DOUBLE) + 1.0)
-            / (CAST(COALESCE(c1, 0) AS DOUBLE) + CAST(v AS DOUBLE)))
-            * 1e4, 0) AS BIGINT)) AS BIGINT) AS s2
+          CAST(SUM($addOneLpSql) AS BIGINT) AS s2
         FROM pbi p LEFT JOIN cnt2 USING (g) LEFT JOIN uni USING (w1)
         CROSS JOIN vv GROUP BY p.doc_id),
       r AS (SELECT doc_id,
@@ -1419,10 +1384,10 @@ object TrainingDataMixture {
           unnest(embedding) AS v
         FROM embeddings),
       cen AS (SELECT label, pos,
-          SUM(FLOOR(CAST(v AS DOUBLE) * 16777216)) AS sv, COUNT(*) AS n
+          SUM(${enc24Sql("v")}) AS sv, COUNT(*) AS n
         FROM d1 GROUP BY label, pos),
       cmp AS (SELECT label, pos,
-          CAST(sv AS DOUBLE) / (CAST(n AS DOUBLE) * 16777216) AS comp
+          ${dec24Sql("sv", "n")} AS comp
         FROM cen),
       rl AS (SELECT label, list(comp ORDER BY pos) AS r
         FROM cmp GROUP BY label),
@@ -1527,14 +1492,10 @@ object TrainingDataMixture {
       tr AS (SELECT regexp_split_to_array(trim(text), '\\s+') AS toks
         FROM dd WHERE b < 90),
       ho AS (SELECT source, text FROM dd WHERE b >= 90),
-      uni AS (SELECT w1, CAST(COUNT(*) AS BIGINT) AS c1
-        FROM (SELECT unnest(toks) AS w1 FROM tr) GROUP BY w1),
+      $addOneUniCte,
       scal AS (SELECT CAST(SUM(c1) AS BIGINT) AS nn,
           CAST(COUNT(*) + 1 AS BIGINT) AS v FROM uni),
-      cnt2 AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS c2 FROM (
-          SELECT unnest(list_transform(range(1, greatest(len(toks) - 1, 0)
-            + 1), i -> toks[i] || ' ' || toks[i+1])) AS g FROM tr)
-        GROUP BY g),
+      $addOneCnt2Cte,
       htok AS (SELECT source,
           unnest(regexp_split_to_array(trim(text), '\\s+')) AS w1
         FROM ho),
@@ -1555,10 +1516,7 @@ object TrainingDataMixture {
               regexp_split_to_array(trim(text), '\\s+') AS toks
             FROM ho))),
       ebb AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS nb,
-          CAST(SUM(CAST(ROUND(-LN(
-            (CAST(COALESCE(c2, 0) AS DOUBLE) + 1.0)
-            / (CAST(COALESCE(c1, 0) AS DOUBLE) + CAST(v AS DOUBLE)))
-            * 1e4, 0) AS BIGINT)) AS BIGINT) AS sb
+          CAST(SUM($addOneLpSql) AS BIGINT) AS sb
         FROM hbi LEFT JOIN cnt2 USING (g) LEFT JOIN uni USING (w1)
         CROSS JOIN scal GROUP BY source),
       ellb AS (SELECT source, (2 * sb + nb) // (2 * nb) AS ell_bi_q

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The driver contract's own plumbing: the query registry and Bench's
   * per-query timing and failure accounting. */
@@ -153,5 +154,38 @@ class ContractSpec extends AnyFunSuite {
           !headAt(r.start))
     } yield s"$k:$name"
     assert(unread.isEmpty, s"${unread.size} unread WITH entries: ${unread.mkString(", ")}")
+  }
+
+  test("shared numeric stages: src/main writes each one in its one helper only") {
+    // pattern -> (the one file that may write it, how often it does)
+    val vec = "graft/functions/VectorExpressions.scala"
+    val td = "graft/queries/TrainingData.scala"
+    val ann = "graft/queries/TrainingDataAnn.scala"
+    val guards = Seq(
+      // the exact 2^24 mean's encode/decode pair, Spark and DuckDB
+      java.util.regex.Pattern.quote("1 << 24") -> (vec, 2),
+      "16777216" -> (td, 2),
+      // the literal-vector dot lambda, Spark and DuckDB
+      """\((\w+),\s*(\w+)\)\s*=>\s*\1\.cast\("double"\)\s*\*\s*\2\b""" -> (vec, 1),
+      """CAST\(p\[1\] AS DOUBLE\) \* p\[2\]""" -> (ann, 1),
+      // the double-cast difference of L2 and the residual, Spark and
+      // DuckDB (L2 squares it, so writes it twice)
+      """\w+\.cast\("double"\)\s*-\s*\w+\.cast\("double"\)""" -> (vec, 2),
+      """CAST\(p\[1\] AS DOUBLE\) - CAST\(p\[2\] AS DOUBLE\)""" -> (ann, 3),
+      // the add-one bigram lp, Spark and DuckDB
+      """coalesce\(col\("c2"\),\s*lit\(0L\)\)\.cast\("double"\)\s*\+\s*1\.0""" -> (td, 1),
+      """CAST\(COALESCE\(c2,\s*0\)\s+AS\s+DOUBLE\)\s*\+\s*1\.0""" -> (td, 1))
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = {
+      val st = java.nio.file.Files.walk(root)
+      try st.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally st.close()
+    }.map(f => root.relativize(f).toString -> java.nio.file.Files.readString(f))
+    assert(files.exists(_._1 == vec) && files.exists(_._1 == td))
+    for ((pat, (home, n)) <- guards) {
+      val hits = files.map { case (f, src) => f -> pat.r.findAllMatchIn(src).size }
+        .filter(_._2 > 0)
+      assert(hits == List(home -> n), s"$pat is written in $hits, want $home x$n")
+    }
   }
 }

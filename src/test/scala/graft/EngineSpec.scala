@@ -1004,7 +1004,7 @@ class EngineSpec extends AnyFunSuite {
     val probed = Tables.embeddings(spark, sf).filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
       .crossJoin(broadcast(coarse))
-      .withColumn("dq", graft.ml.PqIndex.l2q(col("qe"), col("ce")))
+      .withColumn("dq", graft.functions.VectorExpressions.l2q(col("qe"), col("ce")))
       .withColumn("rk", org.apache.spark.sql.functions.row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("qid"))
           .orderBy(col("dq"), col("cid"))))
@@ -1644,7 +1644,7 @@ class EngineSpec extends AnyFunSuite {
       val cents = PqIndex.trainCodebook(e, m = 2, dsub = 8, k = 4)
       PqIndex.subvectors(e, 2, 8)
         .join(broadcast(cents), Seq("m"))
-        .withColumn("dq", PqIndex.l2q(col("sub"), col("ce")))
+        .withColumn("dq", graft.functions.VectorExpressions.l2q(col("sub"), col("ce")))
         .groupBy(col("vec_id"), col("m"))
         .agg(min(col("dq")).as("best"))
         .agg(sum(col("best"))).collect()(0).getLong(0)
@@ -1660,13 +1660,13 @@ class EngineSpec extends AnyFunSuite {
         .select(col("vec_id").as("qid"), col("m"), col("sub").as("qsub"))
       val adc = nce.join(broadcast(qs), Seq("m"))
         .filter(col("qid") =!= col("nid"))
-        .withColumn("dq", PqIndex.l2q(col("qsub"), col("ce")))
+        .withColumn("dq", graft.functions.VectorExpressions.l2q(col("qsub"), col("ce")))
         .groupBy(col("qid"), col("nid")).agg(sum(col("dq")).as("adc_q"))
       val ex = e.select(col("vec_id").as("nid"), col("embedding").as("ne"))
         .crossJoin(broadcast(e.filter(col("vec_id") < 5)
           .select(col("vec_id").as("qid"), col("embedding").as("qe"))))
         .filter(col("qid") =!= col("nid"))
-        .select(col("qid"), col("nid"), PqIndex.l2q(col("qe"), col("ne")).as("ex_q"))
+        .select(col("qid"), col("nid"), graft.functions.VectorExpressions.l2q(col("qe"), col("ne")).as("ex_q"))
       import org.apache.spark.sql.expressions.Window
       val rf = Window.partitionBy(col("qid")).orderBy(col("ex_q"), col("nid"))
       val rq = Window.partitionBy(col("qid")).orderBy(col("adc_q"), col("nid"))

@@ -159,4 +159,29 @@ class MlSpec extends AnyFunSuite {
     assert(r2 >= r1, s"recall dropped: $r2 < $r1")
     info(f"recall single-cell=$r1%.3f nprobe2=$r2%.3f truth=${truth.size}")
   }
+
+  test("vector helpers: a wrong-width vector raises in-plan, naming both widths") {
+    import org.apache.spark.sql.functions.col
+    import graft.functions.VectorExpressions.{dotLit, l2sq, residual}
+    import spark.implicits._
+    val u = Seq.fill(64)(1.0)
+    // zip_with alone pads the 63-wide side with NULL and the stage
+    // returns NULL; each helper must fail instead
+    val bad = Seq((Seq.fill(63)(1.0f), Seq.fill(64)(1.0f))).toDF("a", "b")
+    for ((name, c) <- Seq("dotLit" -> dotLit(col("a"), u),
+        "l2sq" -> l2sq(col("a"), col("b")),
+        "residual" -> residual(col("a"), col("b")))) {
+      val e = intercept[Exception](bad.select(c.as("v")).collect())
+      assert(e.getMessage.contains("vector widths differ: 63 vs 64"),
+        s"$name: ${e.getMessage}")
+    }
+    // equal widths evaluate as before; a NULL vector stays NULL
+    val ok = Seq((Seq.fill(64)(2.0f), Seq.fill(64)(1.0f)),
+      (null, Seq.fill(64)(1.0f))).toDF("a", "b")
+    val rows = ok.select(dotLit(col("a"), u), l2sq(col("a"), col("b")),
+      residual(col("a"), col("b"))).collect()
+    assert(rows(0).getDouble(0) == 128.0 && rows(0).getDouble(1) == 64.0)
+    assert(rows(0).getSeq[Float](2) == Seq.fill(64)(1.0f))
+    assert((0 until 3).forall(rows(1).isNullAt))
+  }
 }

@@ -4,7 +4,12 @@
     python3 tools/out_same.py A B
 
 A and B are `graft.Verify` output directories: one sub-directory of
-parquet files per query. Each query's rows are read with DuckDB and put
+parquet files per query. A persisted store directory (`target/<store>`)
+compares the same way, one table per sub-directory: files are found at
+any depth, and a table written with `partitionBy` gets its partition
+columns back from the `key=value` directory names. Verify writes each
+query with `coalesce(1)` and no partitions, so a Verify output gains no
+column. Each query's rows are read with DuckDB and put
 in `tools/check.py`'s canonical form (columns sorted by name, rows
 sorted by all columns); two outputs are the same when their columns,
 dtypes and cells are. Prints every key that differs or is missing on
@@ -20,13 +25,17 @@ from check import canon
 
 
 def outputs(root):
-    """Query name -> its parquet files, for every sub-directory of root."""
-    return {d: sorted(glob.glob(os.path.join(root, d, "*.parquet")))
+    """Query name -> its parquet files at any depth, for every
+    sub-directory of root."""
+    return {d: sorted(glob.glob(os.path.join(root, d, "**", "*.parquet"),
+                                recursive=True))
             for d in os.listdir(root) if os.path.isdir(os.path.join(root, d))}
 
 
 def read(con, files):
-    return canon(con.execute(f"SELECT * FROM read_parquet({files!r})").fetchdf())
+    return canon(con.execute(
+        f"SELECT * FROM read_parquet({files!r}, hive_partitioning = true)")
+        .fetchdf())
 
 
 def main():
